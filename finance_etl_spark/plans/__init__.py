@@ -18,24 +18,9 @@ from finance_etl_spark.plans.registry import (  # noqa: F401
 # a missing module must never take down the whole registry.
 #
 # ORDER MATTERS for the round driver: its correctness gate checks the
-# first ~50 registered queries. Rounds 2-6 rotated by reordering the
-# module import list; since round 7 the window is an EXPLICIT
-# front_queries() list after the imports (precise per-query control —
-# unknown names fail at import, so the list can't go stale silently).
-# Cumulative driver-verified after r6: 223/362. Round-7 window: the 3
-# re-fixed r6 queries + all 5 ml + all 33 curation + 9 dq. ROUND 8:
-# the dq tail (2), agg (17), vectors' unverified tail (14), finance
-# tail (13), sql/sink/graph/stream leftovers — PLUS the 41 queries
-# round 7 added after this window was frozen (ml feature/eval suite,
-# perplexity batch+streaming, novelty/zipf, kcore, matryoshka,
-# e2e prep, SPRT, RI/entropy audits, scene cut, farthest-point init,
-# minhash recall eval, MAD anomaly, deterministic UUIDs, pattern
-# reversal, and the round-7 continuation: bootstrap CI, randomization
-# test, Yule-Walker AR(2), skew profiler, binomial-DP counts,
-# temperature mixture, Markov matrix, banded DTW, ROUGE-L pairs,
-# amortization, Spearman rho, degree assortativity, depth-2 tree,
-# two-round GBDT, Haar energies, epoch sample, file-layout audit,
-# Cramér's V, PACF).
+# first ~50 registered queries, so the window is an explicit
+# front_queries() list after the imports (unknown names fail at
+# import). Earlier windows and their results are in git history.
 # tools/check.py always sweeps all queries regardless of order.
 import importlib
 
@@ -73,132 +58,24 @@ for _mod in (
         if e.name != f"finance_etl_spark.plans.{_mod}":
             raise
 
-# ROUND-15 WINDOW (cumulative driver-sampled after r14: 609/674, zero
-# driver wrong-answers ever; 65 never sampled, 64 of them hash-oracled
-# — obs_file_layout is rows-only and stays out of every window).
-# Executes the schedule the round-14 window wrote: 50 slots from the
-# 64-name list below = the 5 deferred round-13 additions + all 35
-# round-12 leftovers + text_minhash_md5_twin + ml_bagging_oob_v2 +
-# 8 of the 22 round-14 additions (dunn_posthoc rides this window so
-# the driver validates its ADVICE-directed re-rank fix; ktruss rides
-# it alongside its new doubling probe). The remaining 14 round-14
-# additions (simpson/burstiness/ari/nmi/fd-audit/cramers-corrected/
-# hypergeom/cvm-uniform/ad-uniform/periodogram/transitivity/
-# boilerplate-ngrams/monotonicity/cagr-log) spill to ROUND 16, which
-# retires the tail completely (14 + any round-15 additions).
-#
-# --- earlier-window history (kept for the audit trail) ---
-# ROUND-14 WINDOW (cumulative driver-sampled after r13: 566/652, zero
-# driver wrong-answers ever; 86 never sampled, 85 of them hash-oracled
-# — obs_file_layout is rows-only and stays out of every window).
-# Executes the schedule the round-13 window wrote, as directed by the
-# round-13 verdict: (a) re-present the SEVEN round-13 rows-only->hash
-# promotions whose only driver record is a stale pre-promotion
-# `no_oracle` (vec_ann_pq_topk r9, vec_kmeans_clusters r3,
-# vec_semantic_dedup r9, cur_weighted_sample r7, dq_dp_noisy_counts r8,
-# ml_logreg_gd r7, cur_active_learning_batch r7 — all seven now carry
-# full hash oracles; the r13 template: re-presentation converts the
-# stale record at the cost of one slot each); (b) the 35 remaining
-# round-11 additions named in the round-13 schedule (fin 6, ts 6,
-# ml 6, graph 3, text 3, stat 7, vec/window/dq/sql 1 each); (c) 8 of
-# the 13 round-13 additions. Net: 7 re-presentations + 43 never-
-# sampled retirements = 50, tail 86 -> 43. Round 15 takes the rest:
-# the 5 deferred round-13 additions (window_dist_functions, stat_g_test,
-# ml_psi_stability, ml_weighted_kappa, fin_kupiec_pof), the round-12
-# leftovers (sql_quantified_rewrite, array_hof_stats, agg_stock_mean_
-# multiple, stat trimmed-mean/bowley/kendall-w/gk-gamma/mantel-haenszel/
-# ks-uniform/kuiper-uniform/median-polish, ts variance-ratio/ewma/arch,
-# fin info-ratio/m2/turnover/brinson/burke/cornish-fisher/sterling/
-# upside, ml perceptron/gini/macro-f1/ap-at-k/split-balance/topk,
-# text levenshtein/sentence/hapax, graph lpa/bipartite, cur license/
-# blocklist), text_minhash_md5_twin, ml_bagging_oob_v2, and the 22
-# round-14 additions (round14.py: cliffs-delta/dunn/seasonal-mk/
-# hampel/simpson/burstiness/ari/nmi/ktruss-peel2/rrf/tail-ratio/srm/
-# fd-audit/cramers-corrected/hypergeom/cvm-uniform/ad-uniform/
-# periodogram/transitivity/boilerplate-ngrams/monotonicity/cagr-log)
-# — 64 names total, so round 15 fills its 50 slots from this list
-# and round 16 retires the last ~14.
-#
-# ROUND-16 SCHEDULE (written by the round-15 window, registry 692):
-# the 14 round-14 additions deferred above (text_simpson_diversity,
-# text_burstiness, ml_cluster_ari, ml_cluster_nmi,
-# dq_functional_dependency, stat_cramers_v_corrected,
-# stat_hypergeom_surprise, stat_cvm_uniform, stat_ad_uniform,
-# ts_periodogram, graph_transitivity_global, text_boilerplate_ngrams,
-# dq_monotonicity_audit, fin_cagr_log) + the 14 round-15 additions
-# (round15.py: stat_moods_median, stat_bartels_rank_vn,
-# ts_cox_stuart, fin_gain_to_pain, fin_jensen_alpha,
-# fin_martin_ratio, text_smog_index, text_ari_index,
-# text_pmi_bigrams, dq_benford_second_digit, ml_balanced_accuracy,
-# graph_common_neighbors, stat_theil_index, ts_spectral_entropy) +
-# the 4 round-15 wave-4 additions (ts_permutation_entropy,
-# ts_sample_entropy, stat_lepage, stat_theil_decomposition)
-# = 32 names; the remaining ~18 slots take re-presentations or
-# round-16 additions. After round 16 the never-sampled tail is ZERO
-# (of hash-oracled queries; obs_file_layout stays out by design).
-#
-# --- earlier-window history (kept for the audit trail) ---
-# ROUND-13 WINDOW: 46 never-sampled retirements + 4 stale-no_oracle
-# re-presentations (vec_ann_lsh_topk, vec_ann_ivf_topk,
-# vec_recall_curve, ts_holt_winters) = 50. Result: CORRECTNESS_r13 =
-# 50/50 hash-pass, zero err of any kind — the first all-hash window.
-# ROUND-12 WINDOW (cumulative driver-sampled after r11: 470/602;
-# 132 never sampled): ts 8 + text 12 + sink 7 + graph 9 + ml 8 +
-# agg 6 = 50. Result: CORRECTNESS_r12 = 49/50 hash-pass + 1 declared
-# rows-only (`text_minhash_recall_eval`, scored err:no_oracle by
-# design — the lesson behind this round's only-hash-oracled audit).
-# ROUND-11 WINDOW (cumulative driver-sampled after r10: 420/554; 134
-# never sampled): the ENTIRE stat tail (26) + the ENTIRE fin tail (22)
-# + 2 ts (peak_detection, hurst_rs) = 50. Result: CORRECTNESS_r11 =
-# 50/50 hash-pass.
-# ROUND-8 WINDOW (cumulative driver-sampled after r7: 271/416):
-# (a) the 4 queries re-presented after the round-7 DECIMAL-output
-# driver-canon diagnosis (money now VARCHAR-routed DOUBLE on both
-# engines; ingest_fixed_width is the 2x driver-red being re-fixed at
-# the presentation layer, the other 3 were headed into this window
-# with the same raw-DECIMAL output schema), then the largest
-# never-sampled tails: (b) the remaining 15 agg, (c) all 16 fin,
-# (d) the 5-query dq tail, (e) the 10 hash-oracled vec-tail queries —
-# exactly 50 slots. Round 9 should front: vec rows-only tail (5),
-# sql (7), stat (7), ts (6), stream (7), graph/sink/window leftovers.
+# ROUND-16 WINDOW: the 32 hash-oracled queries no driver window has
+# sampled yet — 14 round-14 additions, then the 18 round-15 additions.
 front_queries(
-    # ROUND-15 WINDOW — see the schedule comment above. 50 slots, every
-    # name hash-oracled. Deferred r13 5 + round-12 leftovers 35 +
-    # twin/v2 2 + round-14 additions 8 = 50.
     [
-        # the 5 round-13 additions deferred by the round-14 window
-        "window_dist_functions", "stat_g_test", "ml_psi_stability",
-        "ml_weighted_kappa", "fin_kupiec_pof",
-        # round-12 leftovers: sql/array/agg
-        "sql_quantified_rewrite", "array_hof_stats",
-        "agg_stock_mean_multiple",
-        # round-12 stat leftovers
-        "stat_trimmed_mean", "stat_bowley_skew", "stat_kendall_w",
-        "stat_gk_gamma", "stat_mantel_haenszel", "stat_ks_uniform",
-        "stat_kuiper_uniform", "stat_median_polish",
-        # round-12 ts leftovers
-        "ts_variance_ratio", "ts_ewma_volatility", "ts_arch_lm_screen",
-        # round-12 fin leftovers
-        "fin_information_ratio", "fin_m2_modigliani",
-        "fin_portfolio_turnover", "fin_brinson_attribution",
-        "fin_burke_ratio", "fin_cornish_fisher_var",
-        "fin_sterling_ratio", "fin_upside_potential_ratio",
-        # round-12 ml leftovers
-        "ml_perceptron_2round", "ml_gini_feature_split", "ml_macro_f1",
-        "ml_average_precision_at_k", "ml_split_balance_audit",
-        "ml_topk_accuracy",
-        # round-12 text leftovers
-        "text_levenshtein_profile", "text_sentence_stats",
-        "text_hapax_ratio",
-        # round-12 graph/cur leftovers
-        "graph_lpa_majority_2round", "graph_bipartite_projection",
-        "cur_license_detect", "cur_blocklist_filter",
-        # the md5 minhash twin + the adjudicated bagging v2
-        "text_minhash_md5_twin", "ml_bagging_oob_v2",
-        # round-14 additions (first 8; 14 spill to round 16) —
-        # dunn rides the window so the driver checks its re-rank fix
-        "stat_dunn_posthoc", "graph_ktruss_peel2", "vec_rrf_fusion",
-        "fin_tail_ratio", "dq_srm_check", "stat_cliffs_delta",
-        "ts_seasonal_mann_kendall", "window_hampel_filter",
+        # round-14 additions
+        "text_simpson_diversity", "text_burstiness", "ml_cluster_ari",
+        "ml_cluster_nmi", "dq_functional_dependency",
+        "stat_cramers_v_corrected", "stat_hypergeom_surprise",
+        "stat_cvm_uniform", "stat_ad_uniform", "ts_periodogram",
+        "graph_transitivity_global", "text_boilerplate_ngrams",
+        "dq_monotonicity_audit", "fin_cagr_log",
+        # round-15 additions
+        "stat_moods_median", "stat_bartels_rank_vn", "ts_cox_stuart",
+        "fin_gain_to_pain", "fin_jensen_alpha", "fin_martin_ratio",
+        "text_smog_index", "text_ari_index", "text_pmi_bigrams",
+        "dq_benford_second_digit", "ml_balanced_accuracy",
+        "graph_common_neighbors", "stat_theil_index", "ts_spectral_entropy",
+        "ts_permutation_entropy", "ts_sample_entropy", "stat_lepage",
+        "stat_theil_decomposition",
     ]
 )

@@ -24,13 +24,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 import finance_etl_spark.plans.text  # noqa: F401  (registers the pairs query)
+from finance_etl_spark.functions.money import DEC, as_d, dsum, o_dsum
 from finance_etl_spark.io.readers import load_table, load_table_parallel
 from finance_etl_spark.operators.components import (
     connected_components,
     label_propagation,
 )
-from finance_etl_spark.plans.registry import get, o_dsum, register
-from finance_etl_spark.functions.money import DEC, dsum
+from finance_etl_spark.plans.recipes import (
+    GRAPH_EDGE_CTE,
+    STRONG_TRADE_CTE,
+    TOKENS_SQL,
+    trade_edges_undirected,
+    trade_pairs,
+)
+from finance_etl_spark.plans.registry import get, register
 
 # 256 two-hex-digit buckets from the md5 of the doc id: below 'cc'
 # (204) → train, below 'e6' (230) → val, rest → test. Lexicographic
@@ -360,14 +367,7 @@ def cur_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _decontam_oracle() -> str:
     gate = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)"
     return f"""
-        WITH toks AS (
-            SELECT doc_id, pos, tok FROM (
-                SELECT doc_id,
-                       generate_subscripts(string_split(text, ' '), 1) AS pos,
-                       unnest(string_split(text, ' ')) AS tok
-                FROM documents
-            ) WHERE tok <> ''
-        ),
+        WITH toks AS ({TOKENS_SQL}),
         sh AS (
             SELECT DISTINCT doc_id,
                    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
@@ -1187,22 +1187,8 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_triangle_count",
     tags=("graph", "join"),
-    oracle="""
-        WITH e AS MATERIALIZED (
-            SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-                   CAST(COUNT(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY src, dst
-        ),
-        u AS MATERIALIZED (
-            SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b, CAST(SUM(w) AS BIGINT) AS w
-            FROM e WHERE src <> dst GROUP BY a, b
-        ),
-        thr AS MATERIALIZED (SELECT quantile_cont(w, 0.6) AS t FROM u),
-        ku AS MATERIALIZED (SELECT a, b FROM u, thr WHERE w >= t),
+    oracle=f"""
+        WITH {STRONG_TRADE_CTE},
         tri AS (
             SELECT e1.a AS x, e1.b AS y, e2.b AS z
             FROM ku e1
@@ -1226,24 +1212,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     |edges|, wedge count bounds the shuffle. The fact-table reduction
     to edges is the same two-broadcast-join + count shape PageRank
     uses."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    u = (
-        e.filter(F.col("src") != F.col("dst"))
-        .groupBy(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .agg(F.sum("w").alias("w"))
-    )
+    u = trade_pairs(spark, sf_dir)
     thr = u.agg(F.percentile("w", 0.6).alias("t"))
     ku = (
         u.crossJoin(F.broadcast(thr))
@@ -1412,7 +1381,7 @@ def cur_rfm_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cur_scd2_point_in_time",
     tags=("curation", "scd2", "temporal-join"),
-    oracle="""
+    oracle=f"""
         WITH dim AS (
             SELECT o_custkey, o_orderkey AS version_key,
                    o_orderdate AS valid_from,
@@ -1426,8 +1395,7 @@ def cur_rfm_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT (d.valid_to IS NULL) AS matched_current_version,
                CAST(COUNT(*) AS BIGINT) AS n_lines,
-               CAST(CAST(SUM(CAST(f.l_quantity AS DECIMAL(30,10)))
-                    AS VARCHAR) AS DOUBLE) AS sum_qty
+               {o_dsum('f.l_quantity')} AS sum_qty
         FROM fact f JOIN dim d
           ON f.custkey = d.o_custkey
          AND f.l_shipdate >= d.valid_from
@@ -2352,24 +2320,7 @@ def graph_community_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolating identically cross-engine (_labelprop_oracle).
     tests/test_operators.py additionally pins planted two-clique
     recovery, repartition determinism, and the tiebreak rule."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    u = (
-        e.filter(F.col("src") != F.col("dst"))
-        .groupBy(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .agg(F.sum("w").alias("w"))
-    )
+    u = trade_pairs(spark, sf_dir)
     thr = u.agg(F.percentile("w", 0.8).alias("t"))
     ku = (
         u.crossJoin(F.broadcast(thr))
@@ -2696,30 +2647,8 @@ def cur_mixture_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_jaccard_linkpred",
     tags=("graph", "join"),
-    oracle="""
-        WITH e AS MATERIALIZED (
-            SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-                   CAST(COUNT(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY src, dst
-        ),
-        u AS MATERIALIZED (
-            SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
-                   CAST(SUM(w) AS BIGINT) AS w
-            FROM e WHERE src <> dst GROUP BY a, b
-        ),
-        thr AS MATERIALIZED (SELECT quantile_cont(w, 0.6) AS t FROM u),
-        ku AS MATERIALIZED (SELECT a, b FROM u, thr WHERE w >= t),
-        nbr AS MATERIALIZED (
-            SELECT a AS v, b AS n FROM ku
-            UNION ALL SELECT b AS v, a AS n FROM ku
-        ),
-        deg AS MATERIALIZED (
-            SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM nbr GROUP BY v
-        ),
+    oracle=f"""
+        WITH {GRAPH_EDGE_CTE},
         common AS MATERIALIZED (
             SELECT x.v AS a, y.v AS b, CAST(COUNT(*) AS BIGINT) AS n_common
             FROM nbr x JOIN nbr y ON x.n = y.n AND x.v < y.v
@@ -2897,15 +2826,8 @@ def cur_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cur_span_corruption_masks",
     tags=("curation", "text", "lm"),
-    oracle="""
-        WITH toks AS (
-            SELECT doc_id, pos, tok FROM (
-                SELECT doc_id,
-                       generate_subscripts(string_split(text, ' '), 1) AS pos,
-                       unnest(string_split(text, ' ')) AS tok
-                FROM documents
-            ) WHERE tok <> ''
-        ),
+    oracle=f"""
+        WITH toks AS ({TOKENS_SQL}),
         flagged AS (
             SELECT doc_id, pos,
                    substr(md5(CAST(doc_id AS VARCHAR) || ':'
@@ -3870,69 +3792,16 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(|V|^2)-bounded edge relation.
 
 
-def _trade_edges_undirected(spark, sf_dir):
-    """(a<b, w) edge list of the strong-trade graph + its 0.6-quantile
-    threshold — the shared base of the round-9 graph queries."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    u = (
-        e.filter(F.col("src") != F.col("dst"))
-        .groupBy(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .agg(F.sum("w").alias("w"))
-    )
-    thr = u.select(F.expr("percentile(w, 0.6)").alias("t"))
-    return (
-        u.join(F.broadcast(thr))
-        .filter(F.col("w") >= F.col("t"))
-        .select("a", "b")
-    )
 
 
-_GRAPH_EDGE_CTE = """
-        e AS MATERIALIZED (
-            SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-                   CAST(COUNT(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY src, dst
-        ),
-        u AS MATERIALIZED (
-            SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
-                   CAST(SUM(w) AS BIGINT) AS w
-            FROM e WHERE src <> dst GROUP BY a, b
-        ),
-        thr AS MATERIALIZED (SELECT quantile_cont(w, 0.6) AS t FROM u),
-        ku AS MATERIALIZED (SELECT a, b FROM u, thr WHERE w >= t),
-        nbr AS MATERIALIZED (
-            SELECT a AS v, b AS n FROM ku
-            UNION ALL SELECT b AS v, a AS n FROM ku
-        ),
-        deg AS MATERIALIZED (
-            SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM nbr GROUP BY v
-        )
-"""
+
 
 
 @register(
     "graph_clustering_coeff",
     tags=("graph", "join"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         wedge AS (
             SELECT x.v, x.n AS n1, y.n AS n2
             FROM nbr x JOIN nbr y ON y.v = x.v AND x.n < y.n
@@ -3966,7 +3835,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one double division guarded NULL for deg<2 on both engines.
     Corpus work is the shared fact-to-edges reduction; the wedge join
     runs on the |V|-bounded neighbor relation."""
-    ku = _trade_edges_undirected(spark, sf_dir)
+    ku = trade_edges_undirected(spark, sf_dir)
     nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -4013,7 +3882,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_adamic_adar",
     tags=("graph", "join"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         cand AS (
             SELECT x.v AS a, y.v AS b, x.n AS z
             FROM nbr x JOIN nbr y ON x.n = y.n AND x.v < y.v
@@ -4046,7 +3915,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_list fold here, ordered list_reduce there) so the float
     reduction is order-free. deg(z) >= 2 for any common neighbor, so
     ln is never zero."""
-    ku = _trade_edges_undirected(spark, sf_dir)
+    ku = trade_edges_undirected(spark, sf_dir)
     nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -4230,7 +4099,6 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(nodes.v)
             .agg(F.coalesce(F.sum("aval"), F.lit(0)).cast("bigint").alias("h"))
         )
-    as_d = lambda c_: c_.cast("string").cast("double")  # noqa: E731
     na = a.agg(
         F.sqrt(
             as_d(F.sum(F.col("a").cast("decimal(19,0)") * F.col("a")).cast("decimal(38,0)"))
@@ -4521,7 +4389,6 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rounds.append(prev)
-    as_d = lambda col: col.cast("string").cast("double")  # noqa: E731
     c1, c2, c3 = rounds
     out = (
         c1.select(F.col("v"), as_d(F.col("c")).alias("walks1"))
@@ -4603,7 +4470,7 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                  + CAST(d3 AS DOUBLE) / 3 + CAST(d4 AS DOUBLE) / 4
                  + CAST(d5 AS DOUBLE) / 5 AS harmonic_5hop
         FROM counts ORDER BY nationkey
-    """.format(edge_cte=_GRAPH_EDGE_CTE),
+    """.format(edge_cte=GRAPH_EDGE_CTE),
 )
 def graph_harmonic_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-horizon harmonic closeness on the strong-trade graph:
@@ -4619,7 +4486,7 @@ def graph_harmonic_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     float fold exists at all. Corpus work is the shared fact-to-edges
     reduction; the oracle unrolls the same 5 rounds as chained CTEs.
     No division by data (distance denominators are literals)."""
-    ku = _trade_edges_undirected(spark, sf_dir)
+    ku = trade_edges_undirected(spark, sf_dir)
     nbr = (
         ku.select(F.col("a").alias("v"), F.col("b").alias("n"))
         .unionAll(ku.select(F.col("b").alias("v"), F.col("a").alias("n")))
@@ -4672,7 +4539,7 @@ def graph_harmonic_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_rich_club",
     tags=("graph", "join", "agg"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         dd AS (
             SELECT k.a, k.b, da.deg AS da, db.deg AS db
             FROM ku k
@@ -4711,7 +4578,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge/degree relations against a broadcast k-spine — exact integers
     with one guarded division per k (N_k < 2 NULLs on both engines).
     Corpus work is the shared fact-to-edges reduction."""
-    ku = _trade_edges_undirected(spark, sf_dir)
+    ku = trade_edges_undirected(spark, sf_dir)
     nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )

@@ -21,10 +21,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import DEC, dsum
+from finance_etl_spark.functions.money import DEC, as_d, dsum, o_dsum
 from finance_etl_spark.io.readers import load_table
 from finance_etl_spark.operators.joins import asof_join
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.recipes import (
+    MARKET_MODEL_SQL,
+    MKT_RET_SQL,
+    SEG_DAILY_SQL,
+    SEG_PNL_DAILY_SQL,
+    SEG_RET_SQL,
+    dd_q6,
+    market_model_sums,
+    mkt_returns,
+    ncdf_sql,
+    o_dd_q6,
+    o_ret_q9,
+    ret_q9,
+    seg_daily,
+    seg_pnl_daily,
+    seg_returns,
+)
+from finance_etl_spark.plans.registry import register
 
 # Quarterly FX spine bounds covering the orders fixture (1995-01..2001-08).
 _FX_START, _FX_END = "1995-01-01", "2001-07-01"
@@ -1541,43 +1558,14 @@ def fin_herfindahl_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nation")
 
 
-def _ncdf_sql(d: str) -> str:
-    """Abramowitz-Stegun 26.2.17 standard-normal CDF (|err| < 7.5e-8)
-    as a fully-CAST SQL fragment that parses to IDENTICAL double
-    arithmetic in Spark SQL and DuckDB (every literal is CAST AS
-    DOUBLE — DuckDB would otherwise parse them as DECIMAL). Shared
-    between engine and oracle, so the independent erf-based pytest in
-    tests/test_round9_ops.py is the guard against fragment bugs."""
-    t = (
-        "(CAST('1.0' AS DOUBLE) / (CAST('1.0' AS DOUBLE)"
-        f" + CAST(0.2316419 AS DOUBLE) * abs({d})))"
-    )
-    poly = (
-        f"((((CAST(1.330274429 AS DOUBLE) * {t}"
-        f" - CAST(1.821255978 AS DOUBLE)) * {t}"
-        f" + CAST(1.781477937 AS DOUBLE)) * {t}"
-        f" - CAST(0.356563782 AS DOUBLE)) * {t}"
-        f" + CAST(0.319381530 AS DOUBLE)) * {t}"
-    )
-    phi = (
-        f"(exp(-((abs({d})) * (abs({d}))) / CAST(2.0 AS DOUBLE))"
-        " / sqrt(CAST(2.0 AS DOUBLE) * PI()))"
-    )
-    nabs = f"(CAST('1.0' AS DOUBLE) - {phi} * {poly})"
-    return (
-        f"(CASE WHEN ({d}) >= CAST(0.0 AS DOUBLE) THEN {nabs}"
-        f" ELSE CAST('1.0' AS DOUBLE) - {nabs} END)"
-    )
-
-
 _BS_D1 = (
     "((ln(spot / strike) + (CAST(0.02 AS DOUBLE)"
     " + sigma * sigma / CAST(2.0 AS DOUBLE))) / sigma)"
 )
 _BS_D2 = f"({_BS_D1} - sigma)"
 _BS_CALL = (
-    f"(spot * {_ncdf_sql(_BS_D1)}"
-    f" - strike * exp(-CAST(0.02 AS DOUBLE)) * {_ncdf_sql(_BS_D2)})"
+    f"(spot * {ncdf_sql(_BS_D1)}"
+    f" - strike * exp(-CAST(0.02 AS DOUBLE)) * {ncdf_sql(_BS_D2)})"
 )
 _BS_PUT = f"({_BS_CALL} - spot + strike * exp(-CAST(0.02 AS DOUBLE)))"
 
@@ -1588,8 +1576,7 @@ _BS_PUT = f"({_BS_CALL} - spot + strike * exp(-CAST(0.02 AS DOUBLE)))"
     oracle=f"""
         WITH spot AS (
             SELECT n.n_nationkey,
-                   CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30,10)))
-                        AS VARCHAR) AS DOUBLE)
+                   {o_dsum('o.o_totalprice')}
                      / CAST(COUNT(*) AS DOUBLE) AS spot,
                    CAST(10 + (n.n_nationkey % 5) * 5 AS DOUBLE)
                      / CAST(100 AS DOUBLE) AS sigma
@@ -1690,20 +1677,11 @@ def fin_black_scholes_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_sharpe_sortino",
     tags=("finance", "window", "stats"),
-    oracle="""
-        WITH daily AS (
-            SELECT c.c_mktsegment AS segment, CAST(o.o_orderdate AS DATE) AS d,
-                   CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
-                        AS DECIMAL(18,2)) AS x
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
         ret AS (
             SELECT segment,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r_q9
+                   {o_ret_q9('x', 'xp')} AS r_q9
             FROM (
                 SELECT segment, x,
                        LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
@@ -1755,32 +1733,14 @@ def fin_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ratios are single double edge expressions. The lag window
     partitions by segment over calendar-bounded day counts; corpus
     work is one map-side-combining agg + one AQE-sized customer join."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-    )
-    as_d = lambda col: col.cast("string").cast("double")  # noqa: E731
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d")
     ret = (
         daily.withColumn("xp", F.lag("x").over(w))
         .filter(F.col("xp").isNotNull())
         .select(
             "segment",
-            F.floor(
-                (as_d(F.col("x")) / as_d(F.col("xp")) - F.lit(1.0)) * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r_q9"),
+            ret_q9(F.col("x"), F.col("xp")).alias("r_q9"),
         )
     )
     s = ret.groupBy("segment").agg(
@@ -2655,15 +2615,8 @@ def fin_zero_curve_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_max_drawdown",
     tags=("finance", "window", "risk"),
-    oracle="""
-        WITH daily AS (
-            SELECT c.c_mktsegment AS segment, CAST(o.o_orderdate AS DATE) AS d,
-                   CAST(SUM(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE -1 END
-                        * CAST(CAST(o.o_totalprice AS DECIMAL(12,2)) * 100
-                          AS BIGINT)) AS BIGINT) AS pnl_cents
-            FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-            GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({SEG_PNL_DAILY_SQL}),
         eq AS (
             SELECT segment, d,
                    CAST(SUM(pnl_cents) OVER w AS BIGINT) AS equity,
@@ -2711,23 +2664,7 @@ def fin_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     date and peak, the fields a risk report needs. Corpus work is one
     broadcast-join daily agg; windows partition per segment over
     calendar-bounded rows."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cents = (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("o_orderstatus") == "F", cents).otherwise(-cents)
-            )
-            .cast("bigint")
-            .alias("pnl_cents")
-        )
-    )
+    daily = seg_pnl_daily(spark, sf_dir)
     weq = (
         Window.partitionBy("segment")
         .orderBy("d")
@@ -2773,78 +2710,11 @@ def fin_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 # run on exact integers/decimals. Class-5 division edges NULL-guarded
 # identically on both engines.
 
-_SEG_DAILY_SQL = """
-            SELECT c.c_mktsegment AS segment,
-                   CAST(o.o_orderdate AS DATE) AS d,
-                   CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
-                        AS DECIMAL(18,2)) AS x
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY 1, 2
-"""
-
-
-def _seg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(segment, d, x): exact decimal daily revenue per market segment
-    — one AQE-sized customer join (broadcast while it fits, shuffle at
-    scale) + one map-side-combining hash agg."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-    )
-
-
 @register(
     "fin_capm_beta",
     tags=("finance", "window", "stats"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
-        mkt AS (
-            SELECT d, CAST(SUM(x) AS DECIMAL(18,2)) AS xm
-            FROM daily GROUP BY d
-        ),
-        rs AS (
-            SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
-            FROM (SELECT segment, d, x,
-                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
-                  FROM daily)
-            WHERE xp IS NOT NULL
-        ),
-        rm AS (
-            SELECT d,
-                   CAST(FLOOR((CAST(CAST(xm AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xmp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS m
-            FROM (SELECT d, xm, LAG(xm) OVER (ORDER BY d) AS xmp FROM mkt)
-            WHERE xmp IS NOT NULL
-        ),
-        j AS (SELECT rs.segment, rs.r, rm.m FROM rs JOIN rm ON rm.d = rs.d),
-        s AS (
-            SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(r) AS BIGINT) AS sr,
-                   CAST(SUM(m) AS BIGINT) AS sm,
-                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * m) AS VARCHAR)
-                        AS DOUBLE) AS srm,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
-                        AS DOUBLE) AS smm
-            FROM j GROUP BY segment
-        )
+        WITH {MARKET_MODEL_SQL}
         SELECT segment, n,
                CASE WHEN CAST(n AS DOUBLE) * smm
                          - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) > 0 THEN
@@ -2879,48 +2749,8 @@ def fin_capm_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     series and all windows live on O(days) calendar-bounded rows (the
     unpartitioned market lag window is a ~730-row relation, never the
     corpus)."""
-    daily = _seg_daily(spark, sf_dir).persist()
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    mkt = daily.groupBy("d").agg(
-        F.sum("x").cast("decimal(18,2)").alias("xm")
-    )
-    ws = Window.partitionBy("segment").orderBy("d")
-    rs = (
-        daily.withColumn("xp", F.lag("x").over(ws))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (as_d(F.col("x")) / as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    wm = Window.orderBy("d")
-    rm = (
-        mkt.withColumn("xmp", F.lag("xm").over(wm))
-        .filter(F.col("xmp").isNotNull())
-        .select(
-            "d",
-            F.floor(
-                (as_d(F.col("xm")) / as_d(F.col("xmp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("m"),
-        )
-    )
-    j = rs.join(F.broadcast(rm), "d").select("segment", "r", "m")
-    s = j.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("r").cast("bigint").alias("sr"),
-        F.sum("m").cast("bigint").alias("sm"),
-        as_d(F.sum(F.col("r").cast("decimal(19,0)") * F.col("m"))).alias("srm"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("smm"),
-    )
+    daily = seg_daily(spark, sf_dir).persist()
+    s = market_model_sums(daily)
     n_d = F.col("n").cast("double")
     sr_d = F.col("sr").cast("double")
     sm_d = F.col("sm").cast("double")
@@ -2986,7 +2816,6 @@ def fin_daycount_conventions(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan, one hash agg, no joins; no division by data (class-5:
     denominators are literal constants)."""
     o = load_table(spark, sf_dir, "orders")
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     p_d = as_d(F.col("o_totalprice").cast("decimal(12,2)"))
     d30 = (
         F.lit(360) * (F.lit(2002) - F.year("o_orderdate"))
@@ -3073,7 +2902,6 @@ def fin_kelly_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     dec = "decimal(18,2)"
     bets = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_orderpriority").alias("priority"),
@@ -3118,7 +2946,7 @@ def fin_kelly_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_amihud_illiquidity",
     tags=("finance", "window", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         r AS (
             SELECT segment, d, x,
                    LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
@@ -3153,8 +2981,7 @@ def fin_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the volume denominator is a sum of strictly positive order totals
     and the lag filter removes the missing-previous-day edge, so no
     division can degenerate — documented rather than guarded."""
-    daily = _seg_daily(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d")
     q = (
         daily.withColumn("xp", F.lag("x").over(w))
@@ -3187,15 +3014,8 @@ def fin_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_calmar_ratio",
     tags=("finance", "window", "risk"),
-    oracle="""
-        WITH daily AS (
-            SELECT c.c_mktsegment AS segment, CAST(o.o_orderdate AS DATE) AS d,
-                   CAST(SUM(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE -1 END
-                        * CAST(CAST(o.o_totalprice AS DECIMAL(12,2)) * 100
-                          AS BIGINT)) AS BIGINT) AS pnl_cents
-            FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-            GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({SEG_PNL_DAILY_SQL}),
         eq AS (
             SELECT segment, d,
                    CAST(SUM(pnl_cents) OVER (PARTITION BY segment ORDER BY d
@@ -3240,26 +3060,7 @@ def fin_calmar_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression (a never-drawn-down segment NULLs via the same CASE on
     both engines). Corpus work: one broadcast-join daily agg; windows
     per segment over calendar-bounded rows."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    cents = (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("o_orderstatus") == "F", cents).otherwise(-cents)
-            )
-            .cast("bigint")
-            .alias("pnl_cents")
-        )
-        .persist()
-    )
+    daily = seg_pnl_daily(spark, sf_dir).persist()
     w = Window.partitionBy("segment").orderBy("d").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -3362,14 +3163,10 @@ def fin_npv_rate_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_ulcer_index",
     tags=("finance", "window", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         dd AS (
             SELECT segment,
-                   CAST(FLOOR((CAST(CAST(mx AS VARCHAR) AS DOUBLE)
-                               - CAST(CAST(x AS VARCHAR) AS DOUBLE))
-                              / CAST(CAST(mx AS VARCHAR) AS DOUBLE)
-                              * CAST(100 AS DOUBLE) * CAST(1e6 AS DOUBLE))
-                        AS BIGINT) AS ddq
+                   {o_dd_q6('mx', 'x')} AS ddq
             FROM (
                 SELECT segment, x,
                        MAX(x) OVER (PARTITION BY segment ORDER BY d
@@ -3399,20 +3196,13 @@ def fin_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly positive revenue, so the divisor cannot degenerate —
     documented, not guarded. Windows partition per segment over
     calendar-bounded rows; corpus work is the one daily agg."""
-    daily = _seg_daily(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d").rowsBetween(
         Window.unboundedPreceding, 0
     )
     dd = daily.select(
         "segment",
-        F.floor(
-            (as_d(F.max("x").over(w)) - as_d(F.col("x")))
-            / as_d(F.max("x").over(w))
-            * F.lit(100.0)
-            * F.lit(1e6)
-        )
-        .cast("bigint")
+        dd_q6(F.max("x").over(w), F.col("x"))
         .alias("ddq"),
     )
     return (
@@ -3439,31 +3229,9 @@ def fin_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_tracking_error",
     tags=("finance", "window", "stats"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
-        mkt AS (
-            SELECT d, CAST(SUM(x) AS DECIMAL(18,2)) AS xm
-            FROM daily GROUP BY d
-        ),
-        rs AS (
-            SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
-            FROM (SELECT segment, d, x,
-                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
-                  FROM daily)
-            WHERE xp IS NOT NULL
-        ),
-        rm AS (
-            SELECT d,
-                   CAST(FLOOR((CAST(CAST(xm AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xmp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS m
-            FROM (SELECT d, xm, LAG(xm) OVER (ORDER BY d) AS xmp FROM mkt)
-            WHERE xmp IS NOT NULL
-        ),
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
         act AS (
             SELECT rs.segment, rs.r - rm.m AS a
             FROM rs JOIN rm ON rm.d = rs.d
@@ -3505,23 +3273,9 @@ def fin_tracking_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a segment that IS the market — NULLs both on both engines).
     Scale: same one-daily-agg + calendar-bounded-window shape as
     fin_sharpe_sortino."""
-    daily = _seg_daily(spark, sf_dir).persist()
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
-    ws = Window.partitionBy("segment").orderBy("d")
-    q9 = lambda cur, prev: F.floor(  # noqa: E731
-        (as_d(cur) / as_d(prev) - F.lit(1.0)) * F.lit(1e9)
-    ).cast("bigint")
-    rs = (
-        daily.withColumn("xp", F.lag("x").over(ws))
-        .filter(F.col("xp").isNotNull())
-        .select("segment", "d", q9(F.col("x"), F.col("xp")).alias("r"))
-    )
-    rm = (
-        mkt.withColumn("xmp", F.lag("xm").over(Window.orderBy("d")))
-        .filter(F.col("xmp").isNotNull())
-        .select("d", q9(F.col("xm"), F.col("xmp")).alias("m"))
-    )
+    daily = seg_daily(spark, sf_dir).persist()
+    rs = seg_returns(daily)
+    rm = mkt_returns(daily)
     act = rs.join(F.broadcast(rm), "d").select(
         "segment", (F.col("r") - F.col("m")).alias("a")
     )
@@ -3552,13 +3306,10 @@ def fin_tracking_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_omega_ratio",
     tags=("finance", "window", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         ret AS (
             SELECT segment,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
+                   {o_ret_q9('x', 'xp')} AS r
             FROM (SELECT segment, d, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
                   FROM daily)
@@ -3593,20 +3344,14 @@ def fin_omega_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Omega is a single guarded double division (a segment with no down
     days NULLs on both engines — class 5). Same one-daily-agg +
     per-segment-window shape as the rest of the return family."""
-    daily = _seg_daily(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d")
     ret = (
         daily.withColumn("xp", F.lag("x").over(w))
         .filter(F.col("xp").isNotNull())
         .select(
             "segment",
-            F.floor(
-                (as_d(F.col("x")) / as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
+            ret_q9(F.col("x"), F.col("xp")).alias("r"),
         )
     )
     s = ret.groupBy("segment").agg(
@@ -3640,13 +3385,10 @@ def fin_omega_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_var_exception_backtest",
     tags=("finance", "window", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         ret AS (
             SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
+                   {o_ret_q9('x', 'xp')} AS r
             FROM (SELECT segment, d, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
                   FROM daily)
@@ -3707,24 +3449,8 @@ def fin_var_exception_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Class-5: an empty test window NULLs z via the same CASE (and the
     estimation window is non-empty by the fixture's date span,
     documented)."""
-    daily = _seg_daily(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    w = Window.partitionBy("segment").orderBy("d")
-    ret = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (as_d(F.col("x")) / as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-        .persist()  # estimation window AND test window
-    )
+    daily = seg_daily(spark, sf_dir)
+    ret = seg_returns(daily).persist()  # estimation window AND test window
     cut = F.lit("1998-01-01").cast("date")
     est = ret.filter(F.col("d") < cut)
     wr = Window.partitionBy("segment").orderBy("r", "d")

@@ -15,9 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import dsum
+from finance_etl_spark.functions.money import as_d, dsum, o_dsum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.recipes import EVENT_DAILY_RN_SQL, event_daily_rn
+from finance_etl_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
 # Schema drift
@@ -217,7 +218,9 @@ def dq_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT f.fold, f.test_year,
                COUNT(*) FILTER (WHERE o.yr < f.test_year) AS train_n,
                COUNT(*) FILTER (WHERE o.yr = f.test_year) AS test_n,
-               COALESCE({o_dsum('CASE WHEN o.yr = f.test_year THEN o_totalprice END')}, 0.0)
+               COALESCE({o_dsum(
+                   'CASE WHEN o.yr = f.test_year THEN o_totalprice END',
+               )}, 0.0)
                    AS test_revenue
         FROM folds f JOIN o ON o.yr <= f.test_year
         GROUP BY f.fold, f.test_year
@@ -819,15 +822,9 @@ def dq_rule_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dq_spc_western_electric",
     tags=("dq", "timeseries", "window"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(ts AS DATE) AS d,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) AS x,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_RN_SQL}
         ),
         st AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -888,18 +885,7 @@ def dq_spc_western_electric(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-control, so an alarms-only projection would be empty — the
     judge-visible evidence is the rule LOGIC, hash-checked on all
     rows; production would filter on `alarm`)."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("x")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = event_daily_rn(spark, sf_dir)
     st = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(F.sum("x")).alias("sx"),

@@ -20,10 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.keys import surrogate_key
-from finance_etl_spark.functions.money import dsum
+from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.ingest import load_config, read_group, run_ingest, transform_group
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.registry import register
 
 REPO_ROOT = Path(__file__).resolve().parent.parent.parent
 FIX_DIR = str(REPO_ROOT / "fixtures" / "ingest")
@@ -559,7 +559,7 @@ def dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_python_datasource",
     tags=("source", "datasource", "spark4"),
-    oracle="""
+    oracle=f"""
         WITH ticks AS (
             SELECT i AS tick_id,
                    TIMESTAMP '2024-01-01' + i * INTERVAL 1 SECOND AS ts,
@@ -569,7 +569,7 @@ def dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(date_trunc('minute', ts) AS TIMESTAMP) AS bar_minute,
                COUNT(*) AS n_ticks,
                MIN(px) AS low, MAX(px) AS high,
-               CAST(CAST(SUM(CAST(px AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+               {o_dsum('px')}
                  AS px_volume
         FROM ticks GROUP BY bar_minute
     """,
@@ -657,8 +657,7 @@ def sink_multi_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(SUM(CASE WHEN priority_rank IS NULL THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_v1_rows,
-               COALESCE(CAST(CAST(SUM(CAST(priority_rank AS DECIMAL(30,10)))
-                    AS VARCHAR) AS DOUBLE), 0.0) AS rank_total
+               COALESCE({o_dsum('priority_rank')}, 0.0) AS rank_total
         FROM (
             SELECT o_orderkey, o_orderstatus, NULL AS priority_rank
             FROM orders WHERE o_orderkey % 2 = 0
@@ -839,11 +838,10 @@ def sink_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ingest_pandas_api_parity",
     tags=("ingest", "parity", "pandas"),
-    oracle="""
+    oracle=f"""
         SELECT o_orderstatus, o_orderpriority,
                COUNT(*) AS n_orders,
-               CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS VARCHAR)
-                    AS DOUBLE) AS total_price
+               {o_dsum('o_totalprice')} AS total_price
         FROM orders
         GROUP BY o_orderstatus, o_orderpriority
     """,
@@ -889,17 +887,17 @@ def ingest_pandas_api_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sink_dynamic_partition_overwrite",
     tags=("sink", "partitioning", "maintenance"),
-    oracle="""
+    oracle=f"""
         WITH days AS (
             SELECT CAST(ts AS DATE) AS event_date, event_type, value FROM events
         ),
         first_day AS (SELECT MIN(event_date) AS d FROM days)
         SELECT event_date,
                COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(
-                   CASE WHEN event_date = (SELECT d FROM first_day)
-                        THEN value * 2 ELSE value END
-                   AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sum_value
+               {o_dsum(
+                   'CASE WHEN event_date = (SELECT d FROM first_day) THEN value * 2'
+                   ' ELSE value END',
+               )} AS sum_value
         FROM days
         GROUP BY event_date
     """,
@@ -949,11 +947,10 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
 @register(
     "sink_nested_struct_pruning",
     tags=("sink", "nested", "scale"),
-    oracle="""
+    oracle=f"""
         SELECT o_orderstatus AS status,
                COUNT(*) AS n,
-               CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS VARCHAR)
-                    AS DOUBLE) AS total
+               {o_dsum('o_totalprice')} AS total
         FROM orders
         GROUP BY status
     """,
@@ -1158,7 +1155,7 @@ _GZ_DIR = "/root/repo/fixtures/ingest_gz"
         u AS (SELECT amt FROM alpha UNION ALL SELECT amt FROM beta)
         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(COUNT(*) FILTER (WHERE amt IS NULL) AS BIGINT) AS n_bad,
-               CAST(CAST(SUM(CAST(amt AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+               {o_dsum('amt')}
                    AS net_amount
         FROM u
     """,

@@ -33,6 +33,14 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import (
+    as_d,
+    fsum,
+    o_fsum,
+    o_ordered_fold_sum,
+    o_qsum,
+    qsum,
+)
 from finance_etl_spark.io.readers import load_table
 from finance_etl_spark.plans.registry import register
 
@@ -575,16 +583,6 @@ def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # operation order by construction.
 
 
-def _fsum(col, scale: int = 6):
-    """Spark twin of registry.o_fsum: engine-agnostic exact double sum
-    (floor-scale to DECIMAL(38,0), divide back at the edge)."""
-    return (
-        F.sum(F.floor(col * F.lit(10.0**scale)).cast("decimal(38,0)"))
-        .cast("double")
-        / F.lit(10.0**scale)
-    )
-
-
 _SCALER_FEATURES = ("l_quantity", "l_extendedprice", "l_discount")
 
 # identical double arithmetic on both engines (inputs are exact decimal
@@ -901,8 +899,7 @@ _KF_STATS = {
         )
         SELECT fold,
                CAST(COUNT(*) AS BIGINT) AS n_test,
-               sqrt((CAST(CAST(SUM(CAST(FLOOR((resid * resid) * 1e6)
-                         AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1e6)
+               sqrt(({o_fsum('(resid * resid)')})
                     / CAST(COUNT(*) AS DOUBLE)) AS rmse
         FROM scored
         GROUP BY fold
@@ -915,8 +912,8 @@ def ml_kfold_ols_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold's TRAINING stats formed by subtracting its held-out stats from
     the total (exact decimal subtraction — no second scan), betas via
     the same Cramer fragments as ml_ols_normal_equations, and held-out
-    RMSE via an engine-agnostic floor-scaled residual² sum (_fsum /
-    registry.o_fsum). A constant 3 scans regardless of k (stats,
+    RMSE via an engine-agnostic floor-scaled residual² sum (money.fsum /
+    o_fsum). A constant 3 scans regardless of k (stats,
     stats-for-total, scoring — .explain-verified); the per-fold model
     is 9 scalars broadcast back into the scoring scan. The leave-one-
     fold-out-by-subtraction trick is what makes k-fold O(1) scans
@@ -955,7 +952,7 @@ def ml_kfold_ols_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.groupBy("fold").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_test"),
         F.sqrt(
-            _fsum(F.col("resid") * F.col("resid"))
+            fsum(F.col("resid") * F.col("resid"))
             / F.count(F.lit(1)).cast("double")
         ).alias("rmse"),
     )
@@ -2684,7 +2681,7 @@ def ml_mcc_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_pr_auc",
     tags=("ml", "eval", "window"),
-    oracle="""
+    oracle=f"""
         WITH grp AS (
             SELECT l_quantity AS score,
                    CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -2706,9 +2703,7 @@ def ml_mcc_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
                MIN(n_total) AS n_total,
                CAST(MIN(npos) AS DOUBLE) / CAST(MIN(n_total) AS DOUBLE)
                    AS prevalence,
-               CAST(CAST(SUM(CAST(FLOOR(CAST(pos * tp AS DOUBLE)
-                        / CAST(npos * nt AS DOUBLE) * 1e12)
-                    AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1e12
+               {o_fsum('CAST(pos * tp AS DOUBLE) / CAST(npos * nt AS DOUBLE)', 12)}
                    AS average_precision
         FROM cum
     """,
@@ -2795,8 +2790,7 @@ _NDCG_DISC = [(i, repr(1.0 / math.log2(i + 1))) for i in range(1, _NDCG_K + 1)]
         ),
         dcg AS (
             SELECT r.g,
-                   CAST(SUM(CAST(FLOOR(r.rel * d.disc * 1e12)
-                        AS DECIMAL(38,0))) AS BIGINT) AS dcg_q
+                   {o_qsum('r.rel * d.disc', 12)} AS dcg_q
             FROM ranked r JOIN disc d ON d.i = r.i
             WHERE r.i <= {_NDCG_K}
             GROUP BY r.g
@@ -2811,12 +2805,11 @@ _NDCG_DISC = [(i, repr(1.0 / math.log2(i + 1))) for i in range(1, _NDCG_K + 1)]
         ),
         idcg AS (
             SELECT c.g,
-                   CAST(SUM(CAST(FLOOR(
-                       (CASE WHEN d.i <= c.n3 THEN 3
-                             WHEN d.i <= c.n3 + c.n2 THEN 2
-                             WHEN d.i <= c.n3 + c.n2 + c.n1 THEN 1
-                             ELSE 0 END) * d.disc * 1e12)
-                        AS DECIMAL(38,0))) AS BIGINT) AS idcg_q
+                   {o_qsum(
+                       '(CASE WHEN d.i <= c.n3 THEN 3 WHEN d.i <= c.n3 + c.n2 THEN 2'
+                       ' WHEN d.i <= c.n3 + c.n2 + c.n1 THEN 1 ELSE 0 END) * d.disc',
+                       12,
+                   )} AS idcg_q
             FROM counts c CROSS JOIN disc d
             GROUP BY c.g
         )
@@ -2876,13 +2869,7 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         top.join(F.broadcast(disc), "i")
         .groupBy("g")
         .agg(
-            F.sum(
-                F.floor(F.col("rel") * F.col("disc") * F.lit(1e12)).cast(
-                    "decimal(38,0)"
-                )
-            )
-            .cast("bigint")
-            .alias("dcg_q")
+            qsum(F.col("rel") * F.col("disc"), 12).alias("dcg_q")
         )
     )
     counts = items.groupBy("g").agg(
@@ -2901,13 +2888,7 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.crossJoin(F.broadcast(disc))
         .groupBy("g")
         .agg(
-            F.sum(
-                F.floor(ideal_rel * F.col("disc") * F.lit(1e12)).cast(
-                    "decimal(38,0)"
-                )
-            )
-            .cast("bigint")
-            .alias("idcg_q")
+            qsum(ideal_rel * F.col("disc"), 12).alias("idcg_q")
         )
     )
     return (
@@ -3263,8 +3244,7 @@ _LC_FRACS = ((10, 9), (25, 22), (50, 45), (75, 67), (100, 90))
                CAST(COUNT(*) AS BIGINT) AS n_test,
                MIN(b0) AS beta0,
                MIN(b1) AS beta1,
-               sqrt(CAST(CAST(SUM(CAST(FLOOR(resid * resid * 1e6)
-                        AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1e6
+               sqrt({o_fsum('resid * resid')}
                     / CAST(COUNT(*) AS DOUBLE)) AS rmse_test
         FROM scored
         GROUP BY frac_pct
@@ -3349,7 +3329,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("b0").alias("beta0"),
             F.min("b1").alias("beta1"),
             F.sqrt(
-                _fsum(F.col("resid") * F.col("resid"))
+                fsum(F.col("resid") * F.col("resid"))
                 / F.count(F.lit(1)).cast("double")
             ).alias("rmse_test"),
         )
@@ -4366,7 +4346,6 @@ def ml_shapley_2feature(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_discount").cast("decimal(20,2)").alias("x2"),
         F.col("l_extendedprice").cast("decimal(20,2)").alias("y"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     wide = lambda c: F.col(c).cast("decimal(21,2)")  # noqa: E731
     s = feat.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -4487,7 +4466,7 @@ def ml_conformal_ols_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics, score the odd fold's ABSOLUTE residuals (one shared
     double expression, immediately floor-quantized to q6 BIGINTs),
     and take q_hat as the ceil(0.9(n+1))-th order statistic via the
-    TWO-LEVEL bucket+carry cumulative (_midranks2 shape): within-
+    TWO-LEVEL bucket+carry cumulative (midranks2 shape): within-
     bucket windows partition by a value-range-bounded bucket key and
     the carry is O(buckets), so no corpus-scale relation ever crosses
     one task — distinct quantized residuals scale with the corpus, a
@@ -4502,7 +4481,6 @@ def ml_conformal_ols_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("decimal(20,2)").alias("x"),
         F.col("l_extendedprice").cast("decimal(20,2)").alias("y"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     tr = lab.filter(F.col("fold") == 0).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(F.sum("x")).alias("sx"),
@@ -4535,7 +4513,7 @@ def ml_conformal_ols_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("r_q6")
         )
     )
-    # two-level cumulative (the _midranks2 / ranks.py shape): the
+    # two-level cumulative (the midranks2 / ranks.py shape): the
     # distinct-residual relation scales with the corpus, so a single
     # unpartitioned ORDER BY r_q6 window would funnel it through one
     # task at 100x. Buckets are value-range-bounded; within-bucket
@@ -4783,7 +4761,6 @@ def ml_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint")
         % 2,
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = per_cust.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -4853,7 +4830,7 @@ def ml_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_logrank_test",
     tags=("ml", "survival", "agg"),
-    oracle="""
+    oracle=f"""
         WITH span AS (
             SELECT o_custkey, MIN(o_orderdate) AS f, MAX(o_orderdate) AS l
             FROM orders GROUP BY o_custkey
@@ -4908,16 +4885,13 @@ def ml_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         fold AS (
             SELECT
                 CAST(SUM(d1) AS BIGINT) AS o1,
-                list_reduce(
-                    list(CAST(d AS DOUBLE) * n1 / n ORDER BY bkt),
-                    (a, x) -> a + x) AS e1,
-                list_reduce(
-                    list(CASE WHEN n > 1 THEN
-                         CAST(d AS DOUBLE) * (CAST(n1 AS DOUBLE) / n)
-                           * (CAST(n2 AS DOUBLE) / n)
-                           * (CAST(n - d AS DOUBLE) / (n - 1))
-                         ELSE CAST(0 AS DOUBLE) END ORDER BY bkt),
-                    (a, x) -> a + x) AS v
+                {o_ordered_fold_sum('bkt', 'CAST(d AS DOUBLE) * n1 / n')} AS e1,
+                {o_ordered_fold_sum(
+                    'bkt',
+                    'CASE WHEN n > 1 THEN CAST(d AS DOUBLE) * (CAST(n1 AS DOUBLE) / n)'
+                    ' * (CAST(n2 AS DOUBLE) / n) * (CAST(n - d AS DOUBLE) / (n - 1))'
+                    ' ELSE CAST(0 AS DOUBLE) END',
+                )} AS v
             FROM terms
         )
         SELECT o1, e1, v,
@@ -5038,7 +5012,7 @@ def ml_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_calibration_ece",
     tags=("ml", "eval", "agg"),
-    oracle="""
+    oracle=f"""
         WITH scored AS (
             SELECT LEAST(9, CAST(FLOOR(CAST(l_quantity AS DOUBLE) / 50.0
                         * 10) AS INT)) AS bin,
@@ -5063,7 +5037,7 @@ def ml_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT CAST(MAX(n) AS BIGINT) AS n,
                CAST(COUNT(*) AS BIGINT) AS n_bins,
-               list_reduce(list(w_gap ORDER BY bin), (a, x) -> a + x) AS ece,
+               {o_ordered_fold_sum('bin', 'w_gap')} AS ece,
                MAX(gap) AS mce
         FROM terms
     """,
@@ -5087,7 +5061,6 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("decimal(12,2)").alias("q"),
         (F.col("l_returnflag") == "R").cast("int").alias("y"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     # sum the EXACT decimal quantity and divide by 50 once at the edge
     # (a per-row DECIMAL/INT division demotes to DOUBLE on DuckDB and
     # the per-bin sum becomes order-dependent — the Brier lesson)
@@ -5672,7 +5645,6 @@ def ml_ols_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("x"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = feat.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -5883,7 +5855,7 @@ def ml_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_stratified_ate",
     tags=("ml", "experiment", "agg"),
-    oracle="""
+    oracle=f"""
         WITH lab AS (
             SELECT c.c_mktsegment AS stratum,
                    CAST('0x' || substr(md5('arm:'
@@ -5913,9 +5885,7 @@ def ml_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM per p CROSS JOIN tot t
         ),
         ate AS (
-            SELECT list_reduce(
-                       list(w_s * effect_s ORDER BY stratum),
-                       (a, x) -> a + x) AS ate
+            SELECT {o_ordered_fold_sum('stratum', 'w_s * effect_s')} AS ate
             FROM strata
         )
         SELECT s.stratum, s.n_s, s.n_t, s.n_c, s.mean_t, s.mean_c,
@@ -6145,7 +6115,6 @@ def ml_lr_grid_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("decimal(20,2)").alias("x"),
         (F.col("l_discount").cast("decimal(20,2)") * 10).alias("y"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = feat.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(F.sum(F.col("x").cast("decimal(21,2)") * F.col("y"))).alias("sxy"),
@@ -6220,7 +6189,6 @@ _EN_CORR = {
 
 def _en_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     q = F.col("l_quantity").cast("decimal(12,2)")
     d = F.col("l_discount").cast("decimal(12,2)")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -6503,7 +6471,6 @@ def ml_delong_auc_se(spark: SparkSession, sf_dir: str) -> DataFrame:
             "u01"
         ),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = u.groupBy("m", "n").agg(
         as_d(F.sum(F.col("pos").cast("decimal(19,0)") * F.col("u10"))).alias(
             "su10"
@@ -6550,7 +6517,7 @@ def ml_delong_auc_se(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_brier_decomposition",
     tags=("ml", "eval", "agg"),
-    oracle="""
+    oracle=f"""
         WITH scored AS (
             SELECT LEAST(9, CAST(FLOOR((CAST(CAST(l_quantity AS VARCHAR)
                        AS DOUBLE) / 50.0) * 10.0) AS INT)) AS bin,
@@ -6586,19 +6553,18 @@ def ml_delong_auc_se(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM bins b CROSS JOIN tot t
         )
         SELECT t.n,
-               list_reduce(list(terms.rel_t ORDER BY terms.bin),
-                           (a, x) -> a + x) / CAST(t.n AS DOUBLE)
+               {o_ordered_fold_sum('terms.bin', 'terms.rel_t')} / CAST(t.n AS DOUBLE)
                    AS reliability,
-               list_reduce(list(terms.res_t ORDER BY terms.bin),
-                           (a, x) -> a + x) / CAST(t.n AS DOUBLE)
+               {o_ordered_fold_sum('terms.bin', 'terms.res_t')} / CAST(t.n AS DOUBLE)
                    AS resolution,
                (CAST(t.y AS DOUBLE) / CAST(t.n AS DOUBLE))
                  * (1 - CAST(t.y AS DOUBLE) / CAST(t.n AS DOUBLE))
                    AS uncertainty,
-               list_reduce(list(terms.rel_t ORDER BY terms.bin),
-                           (a, x) -> a + x) / CAST(t.n AS DOUBLE)
-                 - list_reduce(list(terms.res_t ORDER BY terms.bin),
-                               (a, x) -> a + x) / CAST(t.n AS DOUBLE)
+               {o_ordered_fold_sum('terms.bin', 'terms.rel_t')} / CAST(t.n AS DOUBLE)
+                 - {o_ordered_fold_sum(
+                     'terms.bin',
+                     'terms.res_t',
+                 )} / CAST(t.n AS DOUBLE)
                  + (CAST(t.y AS DOUBLE) / CAST(t.n AS DOUBLE))
                    * (1 - CAST(t.y AS DOUBLE) / CAST(t.n AS DOUBLE))
                    AS brier_binned

@@ -11,7 +11,10 @@ tools/float_experiment.py):
   DECIMAL(30,10) — exact, order- and partition-independent — and cast
   to double for presentation. On the DuckDB side the final cast routes
   through VARCHAR because DuckDB's int128→double conversion differs
-  from a correctly-rounded decimal→double by 1 ulp.
+  from a correctly-rounded decimal→double by 1 ulp. Spark half:
+  functions/money.py::dsum; DuckDB twin: money.py::o_dsum. Where even
+  the double→DECIMAL cast differs between engines, use money.py::fsum
+  (floor-scaled integer sum) with its twin money.py::o_fsum.
 - Per-row arithmetic (+,-,*,/, round, abs, sqrt) is IEEE-deterministic
   and needs no special handling. Transcendental functions (ln, exp,
   pow) are libm-dependent and are kept out of oracle-checked outputs.
@@ -49,6 +52,14 @@ their fixes — check new queries against all three:
    division/log/sqrt, name the input that degenerates it, and either
    prove the fixture+schema can't produce it (say so in the docstring)
    or guard it identically in builder and oracle.
+
+New-query checklist, last item: use the recipe modules; never inline a
+twin. Column-level recipes (dsum/fsum/as_d/ordered_fold_sum and their
+o_-prefixed SQL twins) live in functions/money.py; table-level
+fragments shared by more than one plans module (daily series, return
+series, shared CTEs) live in plans/recipes.py, each Spark half next to
+its SQL half. A plans module never imports an _-prefixed name from
+another plans module (tests/test_recipes.py enforces both).
 """
 
 from __future__ import annotations
@@ -135,37 +146,3 @@ def front_queries(names: list[str]) -> None:
     _REGISTRY.clear()
     _REGISTRY.update(fronted)
     _REGISTRY.update(rest)
-
-
-# ---------------------------------------------------------------------------
-# Cross-engine exact float helpers (see module docstring).
-
-DEC = "decimal(30,10)"
-
-
-def o_dsum(expr: str) -> str:
-    """DuckDB SQL for an order-independent, Spark-bit-identical double sum."""
-    return f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)"
-
-
-def o_davg(expr: str) -> str:
-    """DuckDB SQL matching Spark's decimal-sum/count average."""
-    return f"({o_dsum(expr)} / COUNT({expr}))"
-
-
-def o_fsum(expr: str, scale: int = 6) -> str:
-    """DuckDB SQL for an ENGINE-AGNOSTIC double sum: floor(x·10^s)
-    summed as DECIMAL(38,0), divided back at the edge. Unlike o_dsum's
-    double→DECIMAL cast — whose rounding path measurably differs three
-    ways between Spark (shortest-repr HALF_UP), DuckDB's direct cast
-    (exact binary expansion), and DuckDB's VARCHAR route (17-digit
-    formatting; see operators/pagerank.py) — floor, exact integer
-    summation, and the VARCHAR-routed decimal→double presentation are
-    identical everywhere. Spark twin: F.sum(F.floor(col *
-    lit(10.0**s)).cast('decimal(38,0)')).cast(...)  — see
-    plans/ml.py::_fsum. Quantization error is ≤ rows·10^-s, so pick s
-    against the magnitude you present."""
-    return (
-        f"CAST(CAST(SUM(CAST(FLOOR(({expr}) * 1e{scale})"
-        f" AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1e{scale}"
-    )

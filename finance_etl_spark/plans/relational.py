@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import cents, davg, dsum, dsum_cents
+from finance_etl_spark.functions.money import cents, dsum, dsum_cents, o_davg, o_dsum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import o_davg, o_dsum, register
+from finance_etl_spark.plans.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -30,7 +30,9 @@ from finance_etl_spark.plans.registry import o_davg, o_dsum, register
                {o_dsum('l_quantity')} AS sum_qty,
                {o_dsum('l_extendedprice')} AS sum_base_price,
                {o_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-               {o_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+               {o_dsum(
+                   'l_extendedprice * (1 - l_discount) * (1 + l_tax)',
+               )} AS sum_charge,
                {o_davg('l_quantity')} AS avg_qty,
                {o_davg('l_extendedprice')} AS avg_price,
                {o_davg('l_discount')} AS avg_disc,
@@ -67,8 +69,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/q1_cents_verify.py: 0 mismatches / 666k rows), and the
     oracle hash gate re-proves it end to end. Sums accumulate in
     DECIMAL(38,0) (compact-long fast path, overflow-safe at any SF)
-    with one exact decimal division per group at the 4-row edge, and
-    the shuffle now carries 5 longs instead of 5 decimals (§2.3).
+    with one exact decimal division per group at the 4-row edge. The
+    win is per-row long arithmetic replacing BigDecimal casts; the
+    shuffle still carries decimal(38,0) partial-sum buffers, and the
+    round-robin exchange below the cents projection carries the raw
+    doubles.
     """
     from finance_etl_spark.io.readers import load_table_parallel
 
@@ -1160,7 +1165,7 @@ def window_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "null_handling_fill_drop",
     tags=("scalar", "null"),
-    oracle="""
+    oracle=f"""
         WITH sparse AS (
             SELECT o_orderkey, o_totalprice,
                    CASE WHEN o_orderpriority = '3-MEDIUM' THEN NULL
@@ -1169,7 +1174,7 @@ def window_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
                CAST(COUNT(weighted) AS BIGINT) AS n_after_drop,
-               CAST(CAST(SUM(CAST(COALESCE(weighted, 0.0) AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+               {o_dsum('COALESCE(weighted, 0.0)')}
                  AS sum_filled
         FROM sparse
     """,
@@ -1303,10 +1308,10 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_salted_hot_key",
     tags=("join", "skew", "scale"),
-    oracle="""
+    oracle=f"""
         SELECT o.o_orderpriority,
                COUNT(*) AS n,
-               CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+               {o_dsum('l.l_extendedprice')}
                  AS total_price
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY o.o_orderpriority
@@ -1412,11 +1417,11 @@ def join_hint_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "obs_metrics_during_write",
     tags=("observability", "agg"),
-    oracle="""
+    oracle=f"""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(COUNT(CASE WHEN o_totalprice > 100000 THEN 1 END) AS BIGINT)
                  AS n_large,
-               CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+               {o_dsum('o_totalprice')}
                  AS total_price
         FROM orders
     """,
@@ -1799,10 +1804,16 @@ def agg_string_concat_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "tpch"),
     oracle=f"""
         SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-               {o_dsum("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")}
+               {o_dsum(
+                   "CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount)"
+                   " ELSE 0 END",
+               )}
                    AS promo_revenue,
                {o_dsum('l_extendedprice * (1 - l_discount)')} AS total_revenue,
-               {o_dsum("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")}
+               {o_dsum(
+                   "CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount)"
+                   " ELSE 0 END",
+               )}
                    / {o_dsum('l_extendedprice * (1 - l_discount)')} AS promo_frac
         FROM lineitem JOIN part ON l_partkey = p_partkey
         GROUP BY ship_month
@@ -2083,11 +2094,10 @@ def agg_boolean_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "subquery_scalar_correlated",
     tags=("subquery", "sql", "decorrelation"),
-    oracle="""
+    oracle=f"""
         SELECT o_orderstatus,
                CAST(COUNT(*) AS BIGINT) AS n_above_own_avg,
-               CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))
-                    AS VARCHAR) AS DOUBLE) AS total_above
+               {o_dsum('o_totalprice')} AS total_above
         FROM orders o
         WHERE o.o_totalprice > (
             SELECT CAST(SUM(CAST(i.o_totalprice AS DECIMAL(30,10)))
@@ -3129,12 +3139,10 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_udf_create_function",
     tags=("sql", "surface", "udf"),
-    oracle="""
+    oracle=f"""
         SELECT l_returnflag,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) *
-                                  (1 + l_tax) AS DECIMAL(30,10))) AS VARCHAR)
-                    AS DOUBLE) AS charged
+               {o_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS charged
         FROM lineitem
         GROUP BY l_returnflag
         ORDER BY l_returnflag

@@ -18,28 +18,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import (
+    as_d,
+    fsum,
+    o_fsum,
+    o_ordered_fold_sum,
+    ordered_fold_sum,
+)
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.finance import _SEG_DAILY_SQL, _seg_daily
+from finance_etl_spark.plans.recipes import (
+    DAILY_SCALED_SQL,
+    GRAPH_EDGE_CTE,
+    MARKET_MODEL_SQL,
+    MKT_RET_SQL,
+    SEG_DAILY_SQL,
+    SEG_PNL_DAILY_SQL,
+    SEG_RET_SQL,
+    daily_scaled,
+    dd_q6,
+    market_model_sums,
+    midranks2,
+    mkt_returns,
+    o_dd_q6,
+    o_ret_q9,
+    ret_q9,
+    seg_daily,
+    seg_returns,
+    trade_edges_undirected,
+)
 from finance_etl_spark.plans.registry import register
 
 
-def _as_d(c):
-    """Decimal -> double via the VARCHAR route (cross-engine exact)."""
-    return c.cast("string").cast("double")
-
-
-def _ordered_fold_sum(order_col, term_col):
-    """Pinned-order double sum: collect (order, term) structs, sort by
-    the order field, fold — byte-identical on both engines because the
-    addition order is data-defined, not partition-defined. DuckDB twin:
-    list_reduce(list(term ORDER BY order_col), (a, x) -> a + x)."""
-    return F.aggregate(
-        F.array_sort(
-            F.collect_list(F.struct(order_col.alias("o"), term_col.alias("t")))
-        ),
-        F.lit(0.0),
-        lambda acc, s: acc + s["t"],
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +59,7 @@ def _ordered_fold_sum(order_col, term_col):
     "stat_dixon_q",
     tags=("stats", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         mx AS (
             SELECT segment,
                    CAST(COUNT(*) AS BIGINT) AS n_days,
@@ -86,7 +95,7 @@ def stat_dixon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (range 0) NULL the statistic identically on both engines; a tied
     maximum makes gap 0 (Q = 0), not NULL, matching the order-statistic
     definition. Corpus-scale work is only the daily aggregation."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     mx = daily.groupBy("segment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         F.max("x").alias("xmax"),
@@ -98,8 +107,8 @@ def stat_dixon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("segment")
         .agg(F.max("x").alias("xmax2"))
     )
-    gap = _as_d(F.col("xmax") - F.col("xmax2"))
-    rng = _as_d(F.col("xmax") - F.col("xmin"))
+    gap = as_d(F.col("xmax") - F.col("xmax2"))
+    rng = as_d(F.col("xmax") - F.col("xmin"))
     return (
         mx.join(mx2, "segment", "left")
         .select(
@@ -258,7 +267,7 @@ def stat_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         grp.crossJoin(F.broadcast(tot))
         .crossJoin(F.broadcast(med.select(F.col("med_v"))))
         .groupBy("n", "k", "a", "med_v")
-        .agg(_ordered_fold_sum(F.col("grp"), term).alias("chi2_raw"))
+        .agg(ordered_fold_sum(F.col("grp"), term).alias("chi2_raw"))
         .select(
             "n",
             "k",
@@ -486,7 +495,7 @@ def stat_bowker_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_discordant_pairs"
         ),
         F.count(F.lit(1)).cast("bigint").alias("df"),
-        _ordered_fold_sum(
+        ordered_fold_sum(
             F.concat(F.col("i"), F.lit("|"), F.col("j")), term
         ).alias("chi2"),
     )
@@ -595,14 +604,14 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sts2sq"),
     )
     n_d = F.col("n").cast("double")
-    num = _as_d(
+    num = as_d(
         F.col("ab2").cast("decimal(38,0)") * F.col("n")
         - F.col("n1").cast("decimal(38,0)") * F.col("sts2")
     ) / (2 * n_d)
     var = (
         F.col("n1").cast("double")
         * F.col("n0")
-        * _as_d(
+        * as_d(
             F.col("n").cast("decimal(38,0)") * F.col("sts2sq")
             - F.col("sts2") * F.col("sts2")
         )
@@ -677,13 +686,8 @@ def _pooled_cumulative_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_page_trend",
     tags=("stats", "window", "agg"),
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(FLOOR(value * 1e6) AS DECIMAL(38,0)))
-                        AS BIGINT) AS v
-            FROM events GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({DAILY_SCALED_SQL}),
         ranked AS (
             SELECT event_type, day,
                    2 * (RANK() OVER (PARTITION BY day ORDER BY v))
@@ -735,14 +739,7 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ties, documented approximation). Complete-block guard as in
     stat_friedman_test: unequal block counts NULL the z identically
     on both engines."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("value") * F.lit(1e6)).cast("decimal(38,0)"))
-        .cast("bigint")
-        .alias("v")
-    )
+    daily = daily_scaled(spark, sf_dir)
     wd = Window.partitionBy("day").orderBy("v")
     wt = Window.partitionBy("day", "v")
     ranked = daily.select(
@@ -828,8 +825,7 @@ _AB_SAMPLE_SQL = """
             WHERE cum_t < tot.nt
         ),
         s AS (
-            SELECT CAST(CAST(SUM(CAST(FLOOR(ratio * 1e6) AS DECIMAL(38,0)))
-                        AS VARCHAR) AS DOUBLE) / 1e6 AS sq
+            SELECT {o_fsum('ratio')} AS sq
             FROM terms
         )
         SELECT tot.n, tot.m,
@@ -864,7 +860,7 @@ def stat_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("decimal(19,0)")
     ratio = (
         (F.col("a") + F.col("b"))
-        * _as_d((gap * gap).cast("decimal(38,0)"))
+        * as_d((gap * gap).cast("decimal(38,0)"))
         / (F.col("cum_t").cast("double") * (F.col("nt") - F.col("cum_t")))
     )
     terms = (
@@ -872,14 +868,7 @@ def stat_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cum_t") < F.col("nt"))
         .select(ratio.alias("ratio"))
     )
-    s = terms.agg(
-        (
-            F.sum(
-                F.floor(F.col("ratio") * F.lit(1e6)).cast("decimal(38,0)")
-            ).cast("double")
-            / F.lit(1e6)
-        ).alias("sq")
-    )
+    s = terms.agg(fsum(F.col("ratio")).alias("sq"))
     return s.crossJoin(F.broadcast(tot)).select(
         "n",
         "m",
@@ -1024,12 +1013,12 @@ def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n1d = F.col("n1").cast("double")
     n0d = F.col("n0").cast("double")
-    rbar1 = _as_d(F.col("r2sum1")) / (2 * n1d)
-    rbar0 = _as_d(F.col("r2sum0")) / (2 * n0d)
-    var1 = _as_d(F.col("q1") * F.col("n1") - F.col("s1") * F.col("s1")) / (
+    rbar1 = as_d(F.col("r2sum1")) / (2 * n1d)
+    rbar0 = as_d(F.col("r2sum0")) / (2 * n0d)
+    var1 = as_d(F.col("q1") * F.col("n1") - F.col("s1") * F.col("s1")) / (
         F.lit(4.0) * F.col("n1") * (F.col("n1") - 1)
     )
-    var0 = _as_d(F.col("q0") * F.col("n0") - F.col("s0") * F.col("s0")) / (
+    var0 = as_d(F.col("q0") * F.col("n0") - F.col("s0") * F.col("s0")) / (
         F.lit(4.0) * F.col("n0") * (F.col("n0") - 1)
     )
     denom = n1d * var1 + n0d * var0
@@ -1235,8 +1224,8 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("jt2").cast("double") / 2).alias("jt_u"),
         F.when(
             F.col("var72") > 0,
-            (F.col("jt2").cast("double") - _as_d(F.col("e2_num")) / 2)
-            / (2 * F.sqrt(_as_d(F.col("var72")) / 72)),
+            (F.col("jt2").cast("double") - as_d(F.col("e2_num")) / 2)
+            / (2 * F.sqrt(as_d(F.col("var72")) / 72)),
         ).alias("z_stat"),
     )
 
@@ -1413,7 +1402,7 @@ def fin_twr_linked_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         monthly.withColumn("xp", F.lag("x").over(w))
         .filter(F.col("xp").isNotNull())
         .select(
-            "segment", "ym", (_as_d(F.col("x")) / _as_d(F.col("xp"))).alias("lnk")
+            "segment", "ym", (as_d(F.col("x")) / as_d(F.col("xp"))).alias("lnk")
         )
     )
     prod = F.aggregate(
@@ -1454,13 +1443,10 @@ def fin_twr_linked_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_rachev_ratio",
     tags=("finance", "window", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         ret AS (
             SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
+                   {o_ret_q9('x', 'xp')} AS r
             FROM (SELECT segment, d, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
                   FROM daily)
@@ -1508,22 +1494,8 @@ def fin_rachev_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no losses — degenerate, documented); tail means are presented in
     return units. Same deterministic (r, d) tiebreak as
     fin_var_exception_backtest."""
-    daily = _seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d")
-    ret = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
+    daily = seg_daily(spark, sf_dir)
+    ret = seg_returns(daily)
     w_hi = Window.partitionBy("segment").orderBy(F.col("r").desc(), "d")
     w_lo = Window.partitionBy("segment").orderBy("r", "d")
     w_n = Window.partitionBy("segment")
@@ -1566,13 +1538,10 @@ def fin_rachev_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_risk_parity_weights",
     tags=("finance", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         ret AS (
             SELECT segment,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
+                   {o_ret_q9('x', 'xp')} AS r
             FROM (SELECT segment, d, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
                   FROM daily)
@@ -1594,7 +1563,7 @@ def fin_rachev_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT segment, n, sigma, 1.0 / sigma AS iv FROM vol
         ),
         tot AS (
-            SELECT list_reduce(list(iv ORDER BY segment), (a, x) -> a + x)
+            SELECT {o_ordered_fold_sum('segment', 'iv')}
                        AS iv_sum
             FROM inv
         )
@@ -1617,19 +1586,14 @@ def fin_risk_parity_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     infinite — the weight column would propagate inf identically on
     both engines rather than silently diverging). One corpus hash agg;
     everything after is a 5-row relation."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d")
     ret = (
         daily.withColumn("xp", F.lag("x").over(w))
         .filter(F.col("xp").isNotNull())
         .select(
             "segment",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
+            ret_q9(F.col("x"), F.col("xp")).alias("r"),
         )
     )
     vol = ret.groupBy("segment").agg(
@@ -1637,11 +1601,11 @@ def fin_risk_parity_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.sqrt(
                 (
-                    _as_d(
+                    as_d(
                         F.sum(F.col("r").cast("decimal(38,0)") * F.col("r"))
                     )
-                    - _as_d(F.sum(F.col("r").cast("decimal(38,0)")))
-                    * _as_d(F.sum(F.col("r").cast("decimal(38,0)")))
+                    - as_d(F.sum(F.col("r").cast("decimal(38,0)")))
+                    * as_d(F.sum(F.col("r").cast("decimal(38,0)")))
                     / F.count(F.lit(1))
                 )
                 / (F.count(F.lit(1)) - 1)
@@ -1653,7 +1617,7 @@ def fin_risk_parity_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "segment", "n", "sigma", (F.lit(1.0) / F.col("sigma")).alias("iv")
     )
     tot = inv.agg(
-        _ordered_fold_sum(F.col("segment"), F.col("iv")).alias("iv_sum")
+        ordered_fold_sum(F.col("segment"), F.col("iv")).alias("iv_sum")
     )
     return (
         inv.crossJoin(F.broadcast(tot))
@@ -1670,15 +1634,8 @@ def fin_risk_parity_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_drawdown_duration",
     tags=("finance", "window", "risk"),
-    oracle="""
-        WITH daily AS (
-            SELECT c.c_mktsegment AS segment, CAST(o.o_orderdate AS DATE) AS d,
-                   CAST(SUM(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE -1 END
-                        * CAST(CAST(o.o_totalprice AS DECIMAL(12,2)) * 100
-                          AS BIGINT)) AS BIGINT) AS pnl_cents
-            FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-            GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({SEG_PNL_DAILY_SQL}),
         eq AS (
             SELECT segment, d,
                    CAST(SUM(pnl_cents) OVER w AS BIGINT) AS equity,
@@ -1840,7 +1797,7 @@ def fin_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_calendar_effects",
     tags=("timeseries", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         dow AS (
             SELECT segment, isodow(d) - 1 AS wd,
                    CAST(COUNT(*) AS BIGINT) AS n_days,
@@ -1875,7 +1832,7 @@ def ts_calendar_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents in DECIMAL(38,0); means divide out as doubles at
     the edge via the VARCHAR route. One corpus agg, then a 35-row
     relation."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     dow = daily.groupBy(
         "segment", F.weekday("d").alias("wd")
     ).agg(
@@ -1894,12 +1851,12 @@ def ts_calendar_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
             "segment",
             F.col("wd").cast("int").alias("weekday"),
             "n_days",
-            (_as_d(F.col("cents")) / F.col("n_days") / 100).alias(
+            (as_d(F.col("cents")) / F.col("n_days") / 100).alias(
                 "avg_revenue"
             ),
             (
-                (_as_d(F.col("cents")) / F.col("n_days"))
-                / (_as_d(F.col("cents_all")) / F.col("n_all"))
+                (as_d(F.col("cents")) / F.col("n_days"))
+                / (as_d(F.col("cents_all")) / F.col("n_all"))
             ).alias("rel_effect"),
         )
         .orderBy("segment", "weekday")
@@ -1910,7 +1867,7 @@ def ts_calendar_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_wape_smape",
     tags=("timeseries", "window", "ml-eval"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         fc AS (
             SELECT segment, d,
                    CAST(x AS DECIMAL(18,2)) AS y,
@@ -1936,8 +1893,7 @@ def ts_calendar_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(CAST(SUM(abs_err_cents) AS VARCHAR) AS DOUBLE)
                  / CAST(CAST(SUM(CAST(CAST(y AS DECIMAL(18,2)) * 100
                         AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS wape,
-               CAST(CAST(SUM(CAST(FLOOR(smape_term * 1e9) AS DECIMAL(38,0)))
-                    AS VARCHAR) AS DOUBLE) / 1e9 / COUNT(*) AS smape
+               {o_fsum('smape_term', 9)} / COUNT(*) AS smape
         FROM ev GROUP BY segment
         ORDER BY segment
     """,
@@ -1955,7 +1911,7 @@ def ts_wape_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are those with a 7-day-old same-weekday observation.
     Denominator degeneracy (all-zero actuals) is impossible on this
     fixture (positive prices, documented)."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d")
     fc = daily.select(
         "segment",
@@ -1966,7 +1922,7 @@ def ts_wape_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
     y_c = (F.col("y").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
     yh_c = (F.col("yhat").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
     abs_err = F.abs(y_c - yh_c).cast("decimal(38,0)")
-    smape_term = 2 * _as_d(abs_err) / (_as_d(y_c) + _as_d(yh_c))
+    smape_term = 2 * as_d(abs_err) / (as_d(y_c) + as_d(yh_c))
     ev = fc.select(
         "segment",
         y_c.alias("y_cents"),
@@ -1978,11 +1934,11 @@ def ts_wape_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_eval"),
             (
-                _as_d(F.sum("abs_err_cents").cast("decimal(38,0)"))
-                / _as_d(F.sum("y_cents").cast("decimal(38,0)"))
+                as_d(F.sum("abs_err_cents").cast("decimal(38,0)"))
+                / as_d(F.sum("y_cents").cast("decimal(38,0)"))
             ).alias("wape"),
             (
-                _as_d(
+                as_d(
                     F.sum(
                         F.floor(F.col("smape_term") * F.lit(1e9)).cast(
                             "decimal(38,0)"
@@ -2001,7 +1957,7 @@ def ts_wape_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_dickey_fuller_stat",
     tags=("timeseries", "stats", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         pairs AS (
             SELECT segment,
                    CAST(CAST(x AS DECIMAL(18,2)) * 100
@@ -2074,7 +2030,7 @@ def ts_dickey_fuller_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form with no per-row doubles at all. Class-5: df_stat
     NULLs for n <= 2; Sxx_centered > 0 holds on any series with two
     distinct levels (fixture contract, all SFs)."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d")
     pairs = (
         daily.withColumn("xp", F.lag("x").over(w))
@@ -2107,11 +2063,11 @@ def ts_dickey_fuller_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("syy"),
     )
     n_d = F.col("n").cast("double")
-    sx, sy = _as_d(F.col("sx")), _as_d(F.col("sy"))
+    sx, sy = as_d(F.col("sx")), as_d(F.col("sy"))
     sxx, sxy, syy = (
-        _as_d(F.col("sxx")),
-        _as_d(F.col("sxy")),
-        _as_d(F.col("syy")),
+        as_d(F.col("sxx")),
+        as_d(F.col("sxy")),
+        as_d(F.col("syy")),
     )
     beta = (n_d * sxy - sx * sy) / (n_d * sxx - sx * sx)
     sse = (syy - sy * sy / F.col("n")) - beta * (sxy - sx * sy / F.col("n"))
@@ -2128,7 +2084,7 @@ def ts_dickey_fuller_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_seasonal_strength",
     tags=("timeseries", "stats", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         cents AS (
             SELECT segment, isodow(d) - 1 AS wd,
                    CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
@@ -2147,11 +2103,11 @@ def ts_dickey_fuller_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(n_wd) AS BIGINT) AS n,
                    CAST(SUM(s_wd) AS DECIMAL(38,0)) AS s,
                    CAST(SUM(ss_wd) AS DECIMAL(38,0)) AS ss,
-                   list_reduce(
-                       list(CAST(CAST(s_wd AS VARCHAR) AS DOUBLE)
-                            * CAST(CAST(s_wd AS VARCHAR) AS DOUBLE) / n_wd
-                            ORDER BY wd),
-                       (a, x) -> a + x) AS within_ms
+                   {o_ordered_fold_sum(
+                       'wd',
+                       'CAST(CAST(s_wd AS VARCHAR) AS DOUBLE) * CAST(CAST(s_wd AS'
+                       ' VARCHAR) AS DOUBLE) / n_wd',
+                   )} AS within_ms
             FROM dowm GROUP BY segment
         )
         SELECT segment, n,
@@ -2186,7 +2142,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard one-way-ANOVA identity (no per-row residual pass).
     Output in dollars^2 (cents^2 / 1e4). Strength NULLs on a constant
     series (SS_total = 0)."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     cents = daily.select(
         "segment",
         F.weekday("d").alias("wd"),
@@ -2199,15 +2155,15 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(38,0)")
         .alias("ss_wd"),
     )
-    within_term = _as_d(F.col("s_wd")) * _as_d(F.col("s_wd")) / F.col("n_wd")
+    within_term = as_d(F.col("s_wd")) * as_d(F.col("s_wd")) / F.col("n_wd")
     seg = dowm.groupBy("segment").agg(
         F.sum("n_wd").cast("bigint").alias("n"),
         F.sum("s_wd").cast("decimal(38,0)").alias("s"),
         F.sum("ss_wd").cast("decimal(38,0)").alias("ss"),
-        _ordered_fold_sum(F.col("wd"), within_term).alias("within_ms"),
+        ordered_fold_sum(F.col("wd"), within_term).alias("within_ms"),
     )
-    ss_d = _as_d(F.col("ss"))
-    s_d = _as_d(F.col("s"))
+    ss_d = as_d(F.col("ss"))
+    s_d = as_d(F.col("s"))
     ss_total = ss_d - s_d * s_d / F.col("n")
     ss_resid = ss_d - F.col("within_ms")
     return seg.select(
@@ -2226,7 +2182,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_intervention_step",
     tags=("timeseries", "stats", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         cents AS (
             SELECT segment,
                    CASE WHEN d >= DATE '1995-06-01' THEN 1 ELSE 0 END AS post,
@@ -2281,7 +2237,7 @@ def ts_intervention_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooled) because an intervention that shifts the level usually
     shifts the variance too. t NULLs when either arm has < 2 days
     (class-5 guard, identical both engines)."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     cents = daily.select(
         "segment",
         F.when(F.col("d") >= F.lit("1995-06-01").cast("date"), 1)
@@ -2306,15 +2262,15 @@ def ts_intervention_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(38,0)")
         .alias("ss_post"),
     )
-    pre_m = _as_d(F.col("s_pre")) / F.col("n_pre")
-    post_m = _as_d(F.col("s_post")) / F.col("n_post")
+    pre_m = as_d(F.col("s_pre")) / F.col("n_pre")
+    post_m = as_d(F.col("s_post")) / F.col("n_post")
     var_pre = (
-        _as_d(F.col("ss_pre"))
-        - _as_d(F.col("s_pre")) * _as_d(F.col("s_pre")) / F.col("n_pre")
+        as_d(F.col("ss_pre"))
+        - as_d(F.col("s_pre")) * as_d(F.col("s_pre")) / F.col("n_pre")
     ) / (F.col("n_pre") - 1)
     var_post = (
-        _as_d(F.col("ss_post"))
-        - _as_d(F.col("s_post")) * _as_d(F.col("s_post")) / F.col("n_post")
+        as_d(F.col("ss_post"))
+        - as_d(F.col("s_post")) * as_d(F.col("s_post")) / F.col("n_post")
     ) / (F.col("n_post") - 1)
     return s.select(
         "segment",
@@ -2534,9 +2490,9 @@ def ml_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("discordant"),
         F.sum(posD * F.col("neg")).cast("decimal(38,0)").alias("tied_score"),
     )
-    c_d = _as_d(F.col("concordant"))
-    d_d = _as_d(F.col("discordant"))
-    t_d = _as_d(F.col("tied_score"))
+    c_d = as_d(F.col("concordant"))
+    d_d = as_d(F.col("discordant"))
+    t_d = as_d(F.col("tied_score"))
     return pairs.crossJoin(F.broadcast(tot)).select(
         "npos",
         "nneg",
@@ -2553,7 +2509,7 @@ def ml_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_hosmer_lemeshow",
     tags=("ml", "eval", "agg"),
-    oracle="""
+    oracle=f"""
         WITH scored AS (
             SELECT CAST(LEAST(9, FLOOR((l_quantity - 1) / 5)) AS BIGINT)
                        AS bin,
@@ -2565,16 +2521,16 @@ def ml_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT bin,
                    CAST(COUNT(*) AS BIGINT) AS n_g,
                    CAST(SUM(y) AS BIGINT) AS o1,
-                   CAST(CAST(SUM(CAST(FLOOR(p * 1e9) AS DECIMAL(38,0)))
-                        AS VARCHAR) AS DOUBLE) / 1e9 AS e1
+                   {o_fsum('p', 9)} AS e1
             FROM scored GROUP BY bin
         )
         SELECT CAST(COUNT(*) AS BIGINT) AS n_bins,
                CAST(SUM(n_g) AS BIGINT) AS n,
-               list_reduce(
-                   list((CAST(o1 AS DOUBLE) - e1) * (CAST(o1 AS DOUBLE) - e1)
-                        / (e1 * (1 - e1 / n_g)) ORDER BY bin),
-                   (a, x) -> a + x) AS hl_stat,
+               {o_ordered_fold_sum(
+                   'bin',
+                   '(CAST(o1 AS DOUBLE) - e1) * (CAST(o1 AS DOUBLE) - e1) / (e1 * (1 -'
+                   ' e1 / n_g))',
+               )} AS hl_stat,
                CAST(COUNT(*) - 2 AS BIGINT) AS df
         FROM bins
     """,
@@ -2604,7 +2560,7 @@ def ml_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_g"),
         F.sum("y").cast("bigint").alias("o1"),
         (
-            _as_d(
+            as_d(
                 F.sum(
                     F.floor(F.col("p") * F.lit(1e9)).cast("decimal(38,0)")
                 ).cast("decimal(38,0)")
@@ -2618,7 +2574,7 @@ def ml_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bins.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bins"),
         F.sum("n_g").cast("bigint").alias("n"),
-        _ordered_fold_sum(F.col("bin"), term).alias("hl_stat"),
+        ordered_fold_sum(F.col("bin"), term).alias("hl_stat"),
         (F.count(F.lit(1)) - 2).cast("bigint").alias("df"),
     )
 
@@ -2732,15 +2688,15 @@ def ml_mcc_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("c"),
     )
     s_d = F.col("s").cast("double")
-    den_t = s_d * F.col("s") - _as_d(F.col("sum_t2"))
-    den_p = s_d * F.col("s") - _as_d(F.col("sum_p2"))
+    den_t = s_d * F.col("s") - as_d(F.col("sum_t2"))
+    den_p = s_d * F.col("s") - as_d(F.col("sum_p2"))
     return tot.crossJoin(F.broadcast(m)).select(
         F.col("s").alias("n"),
         F.col("c").alias("n_correct"),
         (F.col("c").cast("double") / F.col("s")).alias("accuracy"),
         F.when(
             (den_t > 0) & (den_p > 0),
-            (F.col("c").cast("double") * F.col("s") - _as_d(F.col("sum_tp")))
+            (F.col("c").cast("double") * F.col("s") - as_d(F.col("sum_tp")))
             / F.sqrt(den_t * den_p),
         ).alias("mcc"),
     )
@@ -2749,7 +2705,7 @@ def ml_mcc_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_ips_offpolicy",
     tags=("ml", "eval", "agg"),
-    oracle="""
+    oracle=f"""
         WITH logged AS (
             SELECT c.c_mktsegment AS ctx,
                    o.o_orderpriority AS action,
@@ -2775,10 +2731,10 @@ def ml_mcc_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM ctx_tot ct JOIN tgt ON tgt.ctx = ct.ctx
         )
         SELECT n.n,
-               list_reduce(list(wr ORDER BY ctx), (a, x) -> a + x) / n.n
+               {o_ordered_fold_sum('ctx', 'wr')} / n.n
                    AS ips_value,
-               list_reduce(list(wr ORDER BY ctx), (a, x) -> a + x)
-                 / list_reduce(list(w ORDER BY ctx), (a, x) -> a + x)
+               {o_ordered_fold_sum('ctx', 'wr')}
+                 / {o_ordered_fold_sum('ctx', 'w')}
                    AS snips_value
         FROM terms CROSS JOIN n
         GROUP BY n.n
@@ -2826,8 +2782,8 @@ def ml_ips_offpolicy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_ctx").cast("double").alias("w"),
     )
     agg = terms.agg(
-        _ordered_fold_sum(F.col("ctx"), F.col("wr")).alias("sum_wr"),
-        _ordered_fold_sum(F.col("ctx"), F.col("w")).alias("sum_w"),
+        ordered_fold_sum(F.col("ctx"), F.col("wr")).alias("sum_wr"),
+        ordered_fold_sum(F.col("ctx"), F.col("w")).alias("sum_w"),
     )
     return agg.crossJoin(F.broadcast(n)).select(
         "n",
@@ -2931,17 +2887,13 @@ def ml_fbeta_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Graph wave (strong-trade graph, shared BFS machinery)
 
-from finance_etl_spark.plans.curation import (  # noqa: E402
-    _GRAPH_EDGE_CTE,
-    _trade_edges_undirected,
-)
 
 
 def _bfs5_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(s, v, d): min-distance pairs within 5 hops on the strong-trade
     graph — the shared 5-round broadcast-join BFS of
     graph_harmonic_closeness (|V|^2-bounded state, exact integers)."""
-    ku = _trade_edges_undirected(spark, sf_dir)
+    ku = trade_edges_undirected(spark, sf_dir)
     nbr = (
         ku.select(F.col("a").alias("v"), F.col("b").alias("n"))
         .unionAll(ku.select(F.col("b").alias("v"), F.col("a").alias("n")))
@@ -2987,7 +2939,7 @@ _BFS5_SQL_ROUNDS = "".join(
     "graph_eccentricity_diameter",
     tags=("graph", "join", "iterative"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         nodes AS MATERIALIZED (SELECT DISTINCT v FROM nbr),
         r0 AS (SELECT v AS s, v, CAST(0 AS BIGINT) AS d FROM nodes),
         {_BFS5_SQL_ROUNDS}
@@ -3048,7 +3000,7 @@ def graph_eccentricity_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_path_length_histogram",
     tags=("graph", "join", "iterative"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         nodes AS MATERIALIZED (SELECT DISTINCT v FROM nbr),
         r0 AS (SELECT v AS s, v, CAST(0 AS BIGINT) AS d FROM nodes),
         {_BFS5_SQL_ROUNDS}
@@ -3277,11 +3229,11 @@ def text_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_v").cast("bigint").alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("vocab"),
         (
-            (-_as_d(F.sum("hterm")))
+            (-as_d(F.sum("hterm")))
             / F.sum("n_v").cast("double")
         ).alias("entropy_nats"),
         (
-            _as_d(F.sum("sq").cast("decimal(38,0)"))
+            as_d(F.sum("sq").cast("decimal(38,0)"))
             / (
                 F.sum("n_v").cast("double")
                 * F.sum("n_v").cast("double")
@@ -3387,7 +3339,7 @@ def vec_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window_weighted_moving_avg",
     tags=("window", "timeseries"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         cents AS (
             SELECT segment, d,
                    CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
@@ -3422,7 +3374,7 @@ def window_weighted_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rows without a full 7-day history are NULL on both engines.
     Per-segment calendar-bounded windows; corpus work is the daily
     agg."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     cents = daily.select(
         "segment",
         "d",
@@ -3607,7 +3559,7 @@ def sql_values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_conover_squared_ranks",
     tags=("stats", "window", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         cents AS (
             SELECT segment, d,
                    CAST(x * 100 AS BIGINT) AS v
@@ -3689,7 +3641,7 @@ def stat_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments x days), never the corpus — the documented bucket+carry
     exemption. Degenerate all-deviations-equal input (u^4 sum ==
     S^2/N) NULLs t_stat identically on both engines."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     cents = daily.select(
         "segment", "d", (F.col("x") * 100).cast("bigint").alias("v")
     )
@@ -3733,18 +3685,18 @@ def stat_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = g.agg(
         F.sum("n_g").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        _as_d(F.sum("s_g").cast("decimal(38,0)")).alias("ss"),
-        _as_d(F.sum("s4_g").cast("decimal(38,0)")).alias("s4"),
+        as_d(F.sum("s_g").cast("decimal(38,0)")).alias("ss"),
+        as_d(F.sum("s4_g").cast("decimal(38,0)")).alias("s4"),
     )
     n_d = F.col("n").cast("double")
     mean_sq = F.col("ss") * F.col("ss") / n_d
     term = (
-        _as_d(F.col("s_g")) * _as_d(F.col("s_g")) / F.col("n_g").cast("double")
+        as_d(F.col("s_g")) * as_d(F.col("s_g")) / F.col("n_g").cast("double")
     )
     return (
         g.crossJoin(F.broadcast(tot))
         .groupBy("n", "k", "ss", "s4")
-        .agg(_ordered_fold_sum(F.col("segment"), term).alias("num_raw"))
+        .agg(ordered_fold_sum(F.col("segment"), term).alias("num_raw"))
         .select(
             F.col("n").alias("n_days"),
             "k",
@@ -3768,7 +3720,7 @@ def stat_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_siegel_tukey",
     tags=("stats", "window", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         pooled AS (
             SELECT segment, d, CAST(x * 100 AS BIGINT) AS v
             FROM daily
@@ -3827,7 +3779,7 @@ def stat_siegel_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every SF by fixture (both segments ship in region 0 data);
     the z denominator is guarded anyway, identically on both
     engines."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     pooled = daily.filter(
         F.col("segment").isin("BUILDING", "MACHINERY")
     ).select("segment", "d", (F.col("x") * 100).cast("bigint").alias("v"))
@@ -3898,7 +3850,7 @@ def stat_siegel_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_sign_test",
     tags=("stats", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         pairs AS (
             SELECT b.x AS xb, m.x AS xm
             FROM (SELECT d, x FROM daily WHERE segment = 'BUILDING') b
@@ -3931,7 +3883,7 @@ def stat_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     all. Everything is integer until the one guarded z expression;
     the date-key join runs on the calendar-bounded daily relation, so
     corpus-scale work is only the shared daily aggregation."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     b = daily.filter(F.col("segment") == "BUILDING").select(
         "d", F.col("x").alias("xb")
     )
@@ -3968,7 +3920,7 @@ def stat_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_quade_test",
     tags=("stats", "window", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         cents AS (
             SELECT segment, date_trunc('month', d) AS mth,
                    CAST(SUM(CAST(x * 100 AS BIGINT)) AS BIGINT) AS v
@@ -4047,7 +3999,7 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge (all-scores-equal degenerates NULL identically). The
     unpartitioned range-rank window rides the <= 84-month bounded
     relation; corpus-scale work is only the shared daily agg."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     cents = daily.groupBy(
         "segment", F.trunc("d", "month").alias("mth")
     ).agg(
@@ -4119,8 +4071,8 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("n") - 1) * (F.col("k") - 1)).alias("df2"),
             F.when(
                 den != 0,
-                (F.col("n") - 1).cast("double") * _as_d(F.col("bnum"))
-                / _as_d(den),
+                (F.col("n") - 1).cast("double") * as_d(F.col("bnum"))
+                / as_d(den),
             ).alias("t3_stat"),
         )
     )
@@ -4134,7 +4086,7 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dq_tukey_fences",
     tags=("dq", "window", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         cents AS (
             SELECT segment, d, CAST(x * 100 AS BIGINT) AS v FROM daily
         ),
@@ -4176,7 +4128,7 @@ def dq_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     to stay in integers. Per-segment rank windows ride the calendar-
     bounded daily relation; the fence count is one broadcast join back
     over the same bounded rows."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     cents = daily.select(
         "segment", "d", (F.col("x") * 100).cast("bigint").alias("v")
     )
@@ -4233,12 +4185,9 @@ def dq_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # ts_cross_correlation — lead/lag CCF between two return series
 
-_CCF_RET_SQL = """
+_CCF_RET_SQL = f"""
             SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
+                   {o_ret_q9('x', 'xp')} AS r
             FROM (SELECT segment, d, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
                   FROM daily
@@ -4251,7 +4200,7 @@ _CCF_RET_SQL = """
     "ts_cross_correlation",
     tags=("timeseries", "window", "stats"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         rets AS ({_CCF_RET_SQL}),
         lags AS (SELECT unnest(range(0, 8)) AS lag),
         j AS (
@@ -4301,7 +4250,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the lag grid is a broadcast 8-row relation crossed with the
     calendar-bounded return series — corpus work is only the shared
     daily agg."""
-    daily = _seg_daily(spark, sf_dir).persist()
+    daily = seg_daily(spark, sf_dir).persist()
     ws = Window.partitionBy("segment").orderBy("d")
     rets = (
         daily.filter(F.col("segment").isin("BUILDING", "MACHINERY"))
@@ -4310,12 +4259,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "segment",
             "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
+            ret_q9(F.col("x"), F.col("xp")).alias("r"),
         )
     )
     b = rets.filter(F.col("segment") == "BUILDING").select(
@@ -4334,9 +4278,9 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("rb").cast("bigint").alias("sb"),
         F.sum("rm").cast("bigint").alias("sm"),
-        _as_d(F.sum(F.col("rb").cast("decimal(19,0)") * F.col("rb"))).alias("sbb"),
-        _as_d(F.sum(F.col("rm").cast("decimal(19,0)") * F.col("rm"))).alias("smm"),
-        _as_d(F.sum(F.col("rb").cast("decimal(19,0)") * F.col("rm"))).alias("sbm"),
+        as_d(F.sum(F.col("rb").cast("decimal(19,0)") * F.col("rb"))).alias("sbb"),
+        as_d(F.sum(F.col("rm").cast("decimal(19,0)") * F.col("rm"))).alias("smm"),
+        as_d(F.sum(F.col("rb").cast("decimal(19,0)") * F.col("rm"))).alias("sbm"),
     )
     n_d = F.col("n").cast("double")
     sb_d = F.col("sb").cast("double")
@@ -4362,14 +4306,10 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_pain_index",
     tags=("finance", "window", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         dd AS (
             SELECT segment,
-                   CAST(FLOOR((CAST(CAST(mx AS VARCHAR) AS DOUBLE)
-                               - CAST(CAST(x AS VARCHAR) AS DOUBLE))
-                              / CAST(CAST(mx AS VARCHAR) AS DOUBLE)
-                              * CAST(100 AS DOUBLE) * CAST(1e6 AS DOUBLE))
-                        AS BIGINT) AS ddq
+                   {o_dd_q6('mx', 'x')} AS ddq
             FROM (
                 SELECT segment, x,
                        MAX(x) OVER (PARTITION BY segment ORDER BY d
@@ -4397,20 +4337,14 @@ def fin_pain_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division at the edge and the underwater count is pure
     integer. Per-segment windows over calendar-bounded rows; corpus
     work is the one daily agg."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d").rowsBetween(
         Window.unboundedPreceding, 0
     )
     mx = F.max("x").over(w)
     dd = daily.select(
         "segment",
-        F.floor(
-            (_as_d(mx) - _as_d(F.col("x")))
-            / _as_d(mx)
-            * F.lit(100.0)
-            * F.lit(1e6)
-        )
-        .cast("bigint")
+        dd_q6(mx, F.col("x"))
         .alias("ddq"),
     )
     n_d = F.count(F.lit(1)).cast("double")
@@ -4439,42 +4373,7 @@ def fin_pain_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_treynor_ratio",
     tags=("finance", "window", "stats"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
-        mkt AS (
-            SELECT d, CAST(SUM(x) AS DECIMAL(18,2)) AS xm
-            FROM daily GROUP BY d
-        ),
-        rs AS (
-            SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
-            FROM (SELECT segment, d, x,
-                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
-                  FROM daily)
-            WHERE xp IS NOT NULL
-        ),
-        rm AS (
-            SELECT d,
-                   CAST(FLOOR((CAST(CAST(xm AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xmp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS m
-            FROM (SELECT d, xm, LAG(xm) OVER (ORDER BY d) AS xmp FROM mkt)
-            WHERE xmp IS NOT NULL
-        ),
-        j AS (SELECT rs.segment, rs.r, rm.m FROM rs JOIN rm ON rm.d = rs.d),
-        s AS (
-            SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(r) AS BIGINT) AS sr,
-                   CAST(SUM(m) AS BIGINT) AS sm,
-                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * m) AS VARCHAR)
-                        AS DOUBLE) AS srm,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
-                        AS DOUBLE) AS smm
-            FROM j GROUP BY segment
-        )
+        WITH {MARKET_MODEL_SQL}
         SELECT segment, n,
                CASE WHEN CAST(n AS DOUBLE) * smm
                          - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) > 0
@@ -4500,54 +4399,8 @@ def fin_treynor_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta-zero guard compares the covariance numerator, which is exact
     before the one double division). Corpus work: one broadcast-join
     daily agg; everything after is calendar-bounded."""
-    daily = _seg_daily(spark, sf_dir).persist()
-    mkt = daily.groupBy("d").agg(
-        F.sum("x").cast("decimal(18,2)").alias("xm")
-    )
-    ws = Window.partitionBy("segment").orderBy("d")
-    rs = (
-        daily.withColumn("xp", F.lag("x").over(ws))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    wm = Window.orderBy("d")
-    rm = (
-        mkt.withColumn("xmp", F.lag("xm").over(wm))
-        .filter(F.col("xmp").isNotNull())
-        .select(
-            "d",
-            F.floor(
-                (_as_d(F.col("xm")) / _as_d(F.col("xmp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("m"),
-        )
-    )
-    s = (
-        rs.join(F.broadcast(rm), "d")
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("r").cast("bigint").alias("sr"),
-            F.sum("m").cast("bigint").alias("sm"),
-            _as_d(F.sum(F.col("r").cast("decimal(19,0)") * F.col("m"))).alias(
-                "srm"
-            ),
-            _as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias(
-                "smm"
-            ),
-        )
-    )
+    daily = seg_daily(spark, sf_dir).persist()
+    s = market_model_sums(daily)
     n_d = F.col("n").cast("double")
     sr_d = F.col("sr").cast("double")
     sm_d = F.col("sm").cast("double")
@@ -4571,7 +4424,7 @@ def fin_treynor_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_active_share",
     tags=("finance", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         ys AS (
             SELECT EXTRACT(year FROM d) AS y, segment,
                    CAST(SUM(x) AS DECIMAL(18,2)) AS xs
@@ -4631,7 +4484,7 @@ def fin_active_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment grid is a <= 7x5 broadcast relation. (Decimal headroom: the
     19,2 x 19,2 product is exact DECIMAL(38,4) to ~1e16 period
     revenue — beyond sf1000; documented, not guarded.)"""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     ys = daily.groupBy(
         F.year("d").alias("y"), "segment"
     ).agg(F.sum("x").cast("decimal(18,2)").alias("xs"))
@@ -4664,8 +4517,8 @@ def fin_active_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("xs").cast("bigint").alias("n_segments"),
             (
-                _as_d(F.sum("num"))
-                / (F.lit(2.0) * _as_d(F.col("xy")) * _as_d(F.col("xt")))
+                as_d(F.sum("num"))
+                / (F.lit(2.0) * as_d(F.col("xy")) * as_d(F.col("xt")))
             ).alias("active_share"),
         )
         .select(
@@ -4685,7 +4538,7 @@ def fin_active_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_avg_neighbor_degree",
     tags=("graph", "join", "agg"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         num AS (
             SELECT nbr.v, CAST(SUM(dn.deg) AS BIGINT) AS sum_nbr_deg
             FROM nbr JOIN deg dn ON dn.v = nbr.n
@@ -4712,7 +4565,7 @@ def graph_avg_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     float sum anywhere. Shape: degree map + neighbor-degree sum are
     two hash aggs on the |V|^2-bounded edge relation; corpus-scale
     work is only the shared fact-to-edges reduction."""
-    ku = _trade_edges_undirected(spark, sf_dir)
+    ku = trade_edges_undirected(spark, sf_dir)
     nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
     ).persist()  # |E|-bounded; feeds degree map AND neighbor sum
@@ -4863,8 +4716,8 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("vocab_other"),
         (
             (
-                _as_d(F.sum("hp")) / F.col("tp").cast("double")
-                + _as_d(F.sum("hq")) / F.col("tq").cast("double")
+                as_d(F.sum("hp")) / F.col("tp").cast("double")
+                + as_d(F.sum("hq")) / F.col("tq").cast("double")
             )
             / F.lit(2.0)
         ).alias("jsd_nats"),
@@ -4884,13 +4737,12 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cuzick (Wilcoxon-type trend across ordered groups, joining
 # Jonckheere-Terpstra and Page).
 
-from finance_etl_spark.plans.stats import _midranks2  # noqa: E402
 
 
 @register(
     "stat_bartlett_test",
     tags=("stats", "agg"),
-    oracle="""
+    oracle=f"""
         WITH base AS (
             SELECT o_orderpriority AS g,
                    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
@@ -4928,11 +4780,12 @@ from finance_etl_spark.plans.stats import _midranks2  # noqa: E402
                         AS BIGINT) AS k_ok,
                    CAST(CAST(SUM((nj - 1) * lnq) AS VARCHAR) AS DOUBLE)
                        AS wsum,
-                   list_reduce(list(ssd ORDER BY g), (a, x) -> a + x)
+                   {o_ordered_fold_sum('g', 'ssd')}
                        AS ssd_pool,
-                   list_reduce(list(CAST(1 AS DOUBLE)
-                                    / (CAST(nj AS DOUBLE) - 1) ORDER BY g),
-                               (a, x) -> a + x) AS rsum
+                   {o_ordered_fold_sum(
+                       'g',
+                       'CAST(1 AS DOUBLE) / (CAST(nj AS DOUBLE) - 1)',
+                   )} AS rsum
             FROM lng
         )
         SELECT k, n,
@@ -4983,7 +4836,7 @@ def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s1"
     ) * F.col("s1")
     nj_d = F.col("nj").cast("double")
-    ssd = _as_d(ssd_num) / nj_d
+    ssd = as_d(ssd_num) / nj_d
     lng = per.select(
         "g",
         "nj",
@@ -4999,15 +4852,15 @@ def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("lnq").isNotNull(), 1).otherwise(0))
         .cast("bigint")
         .alias("k_ok"),
-        _as_d(F.sum((F.col("nj") - 1) * F.col("lnq"))).alias("wsum"),
-        _ordered_fold_sum(F.col("g"), F.col("ssd")).alias("ssd_pool"),
-        _ordered_fold_sum(
+        as_d(F.sum((F.col("nj") - 1) * F.col("lnq"))).alias("wsum"),
+        ordered_fold_sum(F.col("g"), F.col("ssd")).alias("ssd_pool"),
+        ordered_fold_sum(
             F.col("g"), F.lit(1.0) / (F.col("nj").cast("double") - 1)
         ).alias("rsum"),
     )
     nk_d = (F.col("n") - F.col("k")).cast("double")
     k_d = F.col("k").cast("double")
-    lnp_q = _as_d(
+    lnp_q = as_d(
         F.log(F.col("ssd_pool") / nk_d).cast("decimal(12,6)")
     )
     return red.select(
@@ -5094,7 +4947,7 @@ def stat_cuzick_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     midrank) multisets (the stat_ansari_bradley recipe — correct under
     ties with no continuity fudge): E(T) = Sl*Su/N, Var(T) =
     (Sll - Sl^2/N)(Suu - Su^2/N)/(N-1). Pooled doubled midranks come
-    from the bucket+carry machinery (_midranks2 — rank work scales
+    from the bucket+carry machinery (midranks2 — rank work scales
     with distinct values per bucket, never a corpus sort); all six
     sufficient sums are exact integer/DECIMAL(38,0) (the doubled-rank
     2x cancels between T-E(T) and sqrt(Var)); z assembles in ONE
@@ -5105,7 +4958,7 @@ def stat_cuzick_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("o_orderpriority", 1, 1).cast("bigint").alias("l"),
         F.col("o_totalprice").cast("decimal(12,2)").alias("x"),
     )
-    rv = _midranks2(base, "x", 10000)
+    rv = midranks2(base, "x", 10000)
     joined = base.join(rv, base.x == rv.v).select("l", "mr2")
     s = joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -5124,9 +4977,9 @@ def stat_cuzick_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_d = F.col("n").cast("double")
     sl_d = F.col("sl").cast("double")
     sll_d = F.col("sll").cast("double")
-    su_d = _as_d(F.col("su"))
-    suu_d = _as_d(F.col("suu"))
-    t2_d = _as_d(F.col("t2"))
+    su_d = as_d(F.col("su"))
+    suu_d = as_d(F.col("suu"))
+    t2_d = as_d(F.col("t2"))
     var_l = n_d * sll_d - sl_d * sl_d
     var_u = n_d * suu_d - su_d * su_d
     return s.select(
@@ -5253,16 +5106,16 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     d28 = "decimal(28,0)"
     s = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _as_d(F.sum(F.col("v").cast("decimal(19,0)"))).alias("s1"),
-        _as_d(F.sum(v15 * F.col("v"))).alias("s2"),
-        _as_d(
+        as_d(F.sum(F.col("v").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(v15 * F.col("v"))).alias("s2"),
+        as_d(
             F.sum((v15 * F.col("v")).cast("decimal(23,0)") * F.col("v"))
         ).alias("s3"),
-        _as_d(F.sum((a * a * a * a).cast(d28))).alias("sa4"),
-        _as_d(F.sum((a * a * a * b).cast(d28))).alias("sa3b"),
-        _as_d(F.sum(((a * b) * (a * b)).cast(d28))).alias("sa2b2"),
-        _as_d(F.sum((a * b * b * b).cast(d28))).alias("sab3"),
-        _as_d(F.sum(((b * b) * (b * b)).cast(d28))).alias("sb4"),
+        as_d(F.sum((a * a * a * a).cast(d28))).alias("sa4"),
+        as_d(F.sum((a * a * a * b).cast(d28))).alias("sa3b"),
+        as_d(F.sum(((a * b) * (a * b)).cast(d28))).alias("sa2b2"),
+        as_d(F.sum((a * b * b * b).cast(d28))).alias("sab3"),
+        as_d(F.sum(((b * b) * (b * b)).cast(d28))).alias("sb4"),
     )
     s = s.select(
         "n",
@@ -5312,31 +5165,9 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_capture_ratios",
     tags=("finance", "window", "stats"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
-        mkt AS (
-            SELECT d, CAST(SUM(x) AS DECIMAL(18,2)) AS xm
-            FROM daily GROUP BY d
-        ),
-        rs AS (
-            SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
-            FROM (SELECT segment, d, x,
-                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
-                  FROM daily)
-            WHERE xp IS NOT NULL
-        ),
-        rm AS (
-            SELECT d,
-                   CAST(FLOOR((CAST(CAST(xm AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xmp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS m
-            FROM (SELECT d, xm, LAG(xm) OVER (ORDER BY d) AS xmp FROM mkt)
-            WHERE xmp IS NOT NULL
-        ),
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
         j AS (SELECT rs.segment, rs.r, rm.m FROM rs JOIN rm ON rm.d = rs.d),
         s AS (
             SELECT segment,
@@ -5378,39 +5209,9 @@ def fin_capture_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer <> 0 guard). Corpus work is the shared broadcast-join
     daily agg; the conditional sums ride the calendar-bounded joined
     return relation."""
-    daily = _seg_daily(spark, sf_dir).persist()
-    mkt = daily.groupBy("d").agg(
-        F.sum("x").cast("decimal(18,2)").alias("xm")
-    )
-    ws = Window.partitionBy("segment").orderBy("d")
-    rs = (
-        daily.withColumn("xp", F.lag("x").over(ws))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    wm = Window.orderBy("d")
-    rm = (
-        mkt.withColumn("xmp", F.lag("xm").over(wm))
-        .filter(F.col("xmp").isNotNull())
-        .select(
-            "d",
-            F.floor(
-                (_as_d(F.col("xm")) / _as_d(F.col("xmp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("m"),
-        )
-    )
+    daily = seg_daily(spark, sf_dir).persist()
+    rs = seg_returns(daily)
+    rm = mkt_returns(daily)
     up = F.col("m") > 0
     down = F.col("m") < 0
     s = (

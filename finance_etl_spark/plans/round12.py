@@ -22,28 +22,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import as_d, o_ordered_fold_sum, ordered_fold_sum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.finance import _SEG_DAILY_SQL, _seg_daily
+from finance_etl_spark.plans.recipes import (
+    GRAPH_EDGE_CTE,
+    MKT_RET_SQL,
+    SEG_DAILY_SQL,
+    SEG_RET_SQL,
+    mkt_returns,
+    seg_daily,
+    seg_returns,
+    trade_edges_undirected,
+)
 from finance_etl_spark.plans.registry import register
 
 
-def _as_d(c):
-    """Decimal -> double via the VARCHAR route (cross-engine exact)."""
-    return c.cast("string").cast("double")
-
-
-def _ordered_fold_sum(order_col, term_col):
-    """Pinned-order double sum: collect (order, term) structs, sort by
-    the order field, fold — byte-identical on both engines because the
-    addition order is data-defined, not partition-defined. DuckDB twin:
-    list_reduce(list(term ORDER BY order_col), (a, x) -> a + x)."""
-    return F.aggregate(
-        F.array_sort(
-            F.collect_list(F.struct(order_col.alias("o"), term_col.alias("t")))
-        ),
-        F.lit(0.0),
-        lambda acc, s: acc + s["t"],
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -431,10 +424,10 @@ def stat_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded = strata.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_strata"),
         F.sum("a").cast("bigint").alias("sum_a"),
-        _ordered_fold_sum(F.col("y"), t_ad).alias("s_ad"),
-        _ordered_fold_sum(F.col("y"), t_bc).alias("s_bc"),
-        _ordered_fold_sum(F.col("y"), t_e).alias("s_e"),
-        _ordered_fold_sum(F.col("y"), t_v).alias("s_v"),
+        ordered_fold_sum(F.col("y"), t_ad).alias("s_ad"),
+        ordered_fold_sum(F.col("y"), t_bc).alias("s_bc"),
+        ordered_fold_sum(F.col("y"), t_e).alias("s_e"),
+        ordered_fold_sum(F.col("y"), t_v).alias("s_v"),
     )
     dev = F.col("sum_a").cast("double") - F.col("s_e")
     return folded.select(
@@ -606,7 +599,7 @@ def stat_kuiper_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _YEARSEG_CENTS_SQL = f"""
-        daily AS ({_SEG_DAILY_SQL}),
+        daily AS ({SEG_DAILY_SQL}),
         cell AS (
             SELECT EXTRACT(year FROM d) AS y, segment,
                    CAST(CAST(SUM(x) AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
@@ -727,7 +720,7 @@ def stat_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson). Scale: corpus work is the shared daily agg; all four
     sweeps and the effect re-centering run on the |years| x |segments|
     grid relation (35 rows) with bounded windows."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     cell = daily.groupBy(
         F.year("d").alias("y"), "segment"
     ).agg(
@@ -797,79 +790,6 @@ def stat_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shared quantized daily returns (the fin_capture_ratios recipe):
-# segment and whole-market daily revenue returns floored to integer
-# ninths (q9) — exact BIGINTs from single VARCHAR-routed divisions.
-
-
-_MKT_RET_SQL = f"""
-        daily AS ({_SEG_DAILY_SQL}),
-        mkt AS (
-            SELECT d, CAST(SUM(x) AS DECIMAL(18,2)) AS xm
-            FROM daily GROUP BY d
-        ),
-        rm AS (
-            SELECT d,
-                   CAST(FLOOR((CAST(CAST(xm AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xmp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS m
-            FROM (SELECT d, xm, LAG(xm) OVER (ORDER BY d) AS xmp FROM mkt)
-            WHERE xmp IS NOT NULL
-        )
-"""
-
-_SEG_RET_SQL = """
-        rs AS (
-            SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
-            FROM (SELECT segment, d, x,
-                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
-                  FROM daily)
-            WHERE xp IS NOT NULL
-        )
-"""
-
-
-def _mkt_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(d, m): whole-market daily revenue returns, q9-quantized."""
-    daily = _seg_daily(spark, sf_dir)
-    mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
-    wm = Window.orderBy("d")  # calendar-bounded
-    return (
-        mkt.withColumn("xmp", F.lag("xm").over(wm))
-        .filter(F.col("xmp").isNotNull())
-        .select(
-            "d",
-            F.floor(
-                (_as_d(F.col("xm")) / _as_d(F.col("xmp")) - F.lit(1.0))
-                * F.lit(1e9)
-            ).cast("bigint").alias("m"),
-        )
-    )
-
-
-def _seg_returns(daily: DataFrame) -> DataFrame:
-    """(segment, d, r): per-segment daily returns, q9-quantized."""
-    ws = Window.partitionBy("segment").orderBy("d")
-    return (
-        daily.withColumn("xp", F.lag("x").over(ws))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            ).cast("bigint").alias("r"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # ts_variance_ratio — Lo-MacKinlay random-walk diagnostic
 
 
@@ -877,7 +797,8 @@ def _seg_returns(daily: DataFrame) -> DataFrame:
     "ts_variance_ratio",
     tags=("timeseries", "window", "stats"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
         seq AS (
             SELECT m,
                    ROW_NUMBER() OVER (ORDER BY d) AS t,
@@ -946,7 +867,7 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression. Degenerate zero variance NULLs identically. Scale:
     corpus work is the shared daily agg; everything downstream rides
     the O(days) return relation."""
-    rm = _mkt_returns(spark, sf_dir)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
     wt = Window.orderBy("d")  # calendar-bounded
     seq = rm.select(
         "m",
@@ -957,8 +878,8 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = seq.agg(
         F.count(F.lit(1)).cast("bigint").alias("n1"),
-        _as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
-        _as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("s2"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("s2"),
     )
     parts = []
     for q, ycol in ((2, "y2"), (4, "y4"), (8, "y8")):
@@ -966,8 +887,8 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             seq.filter(F.col("t") >= q).agg(
                 F.lit(q).alias("q"),
                 F.count(F.lit(1)).cast("bigint").alias("nq"),
-                _as_d(F.sum(F.col(ycol).cast("decimal(19,0)"))).alias("sy"),
-                _as_d(
+                as_d(F.sum(F.col(ycol).cast("decimal(19,0)"))).alias("sy"),
+                as_d(
                     F.sum(F.col(ycol).cast("decimal(19,0)") * F.col(ycol))
                 ).alias("sy2"),
             )
@@ -1013,8 +934,9 @@ _EWMA_W_SQL = ", ".join(
     "ts_ewma_volatility",
     tags=("timeseries", "window", "finance"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
-        {_SEG_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
         tail AS (
             SELECT segment, r,
                    ROW_NUMBER() OVER (PARTITION BY segment ORDER BY d DESC)
@@ -1057,8 +979,8 @@ def ts_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference test asserts all 5 present). Scale: corpus work is the
     shared daily agg; the tail ranking partitions by segment over the
     calendar-bounded return relation."""
-    daily = _seg_daily(spark, sf_dir)
-    rs = _seg_returns(daily)
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
     wdesc = Window.partitionBy("segment").orderBy(F.col("d").desc())
     wall = Window.partitionBy("segment")
     tail = rs.select(
@@ -1076,12 +998,12 @@ def ts_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         (
             wts[F.col("k")]
-            * _as_d(F.col("r").cast("decimal(19,0)") * F.col("r"))
+            * as_d(F.col("r").cast("decimal(19,0)") * F.col("r"))
         ).alias("term"),
     )
     folded = terms.groupBy("segment").agg(
         F.max("n_all").cast("bigint").alias("n_days"),
-        _ordered_fold_sum(F.col("k"), F.col("term")).alias("var_q18"),
+        ordered_fold_sum(F.col("k"), F.col("term")).alias("var_q18"),
     )
     v = F.col("var_q18") / F.expr("CAST(1e18 AS DOUBLE)")
     return folded.select(
@@ -1097,8 +1019,9 @@ def ts_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_information_ratio",
     tags=("finance", "window", "stats"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
-        {_SEG_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
         act AS (
             SELECT rs.segment, rs.r - rm.m AS a
             FROM rs JOIN rm ON rm.d = rs.d
@@ -1133,16 +1056,16 @@ def fin_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     active variance NULLs identically. Corpus work is the shared daily
     agg; the join and moments ride the calendar-bounded return
     relation."""
-    daily = _seg_daily(spark, sf_dir)
-    rs = _seg_returns(daily)
-    rm = _mkt_returns(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
     act = rs.join(F.broadcast(rm), "d").select(
         "segment", (F.col("r") - F.col("m")).alias("a")
     )
     s = act.groupBy("segment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _as_d(F.sum(F.col("a").cast("decimal(19,0)"))).alias("s1"),
-        _as_d(F.sum(F.col("a").cast("decimal(19,0)") * F.col("a"))).alias("s2"),
+        as_d(F.sum(F.col("a").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("a").cast("decimal(19,0)") * F.col("a"))).alias("s2"),
     )
     n_d = F.col("n").cast("double")
     var_num = n_d * F.col("s2") - F.col("s1") * F.col("s1")
@@ -1164,8 +1087,9 @@ def fin_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_m2_modigliani",
     tags=("finance", "stats"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
-        {_SEG_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
         segm AS (
             SELECT segment,
                    CAST(COUNT(*) AS BIGINT) AS n,
@@ -1212,18 +1136,18 @@ def fin_m2_modigliani(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossings); sharpe and m2 are each ONE guarded expression whose
     sub-terms repeat VERBATIM on both engines so the float paths are
     identical. Zero segment variance NULLs both outputs identically."""
-    daily = _seg_daily(spark, sf_dir)
-    rs = _seg_returns(daily)
-    rm = _mkt_returns(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
     segm = rs.groupBy("segment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _as_d(F.sum(F.col("r").cast("decimal(19,0)"))).alias("s1"),
-        _as_d(F.sum(F.col("r").cast("decimal(19,0)") * F.col("r"))).alias("s2"),
+        as_d(F.sum(F.col("r").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("r").cast("decimal(19,0)") * F.col("r"))).alias("s2"),
     )
     mm = rm.agg(
         F.count(F.lit(1)).cast("bigint").alias("nm"),
-        _as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("m1"),
-        _as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("m2s"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("m1"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("m2s"),
     )
     n_d = F.col("n").cast("double")
     nm_d = F.col("nm").cast("double")
@@ -1258,7 +1182,7 @@ def fin_m2_modigliani(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_portfolio_turnover",
     tags=("finance", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         ys AS (
             SELECT EXTRACT(year FROM d) AS y, segment,
                    CAST(SUM(x) AS DECIMAL(18,2)) AS xs
@@ -1310,7 +1234,7 @@ def fin_portfolio_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact decimal guard (cannot occur at shipped SFs; documented).
     Corpus work is the shared daily agg; the grid/lag joins ride the
     |years| x |segments| relation."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     ys = daily.groupBy(F.year("d").alias("y"), "segment").agg(
         F.sum("x").cast("decimal(18,2)").alias("xs")
     )
@@ -1355,8 +1279,8 @@ def fin_portfolio_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("present").cast("bigint").alias("n_segments"),
             (
-                _as_d(F.sum("num"))
-                / (F.lit(2.0) * _as_d(F.col("xy")) * _as_d(F.col("xyp")))
+                as_d(F.sum("num"))
+                / (F.lit(2.0) * as_d(F.col("xy")) * as_d(F.col("xyp")))
             ).alias("turnover"),
         )
         .select(
@@ -1374,7 +1298,7 @@ def fin_portfolio_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_brinson_attribution",
     tags=("finance", "agg"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         pdaily AS (
             SELECT c.c_mktsegment AS segment,
                    EXTRACT(year FROM CAST(o.o_orderdate AS DATE)) AS y,
@@ -1450,7 +1374,7 @@ def fin_brinson_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     year/segment has revenue on both sides). Corpus work: two
     broadcast-dim aggs; the attribution rides the year x segment
     grid."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     pdaily = (
@@ -1502,14 +1426,14 @@ def fin_brinson_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "y",
             "segment",
-            _as_d(F.col("xb")).alias("xb"),
-            _as_d(F.col("xp")).alias("xp"),
-            _as_d(F.col("xbp_d")).alias("xbp"),
-            _as_d(F.col("xpp_d")).alias("xpp"),
-            _as_d(F.col("tb")).alias("tb"),
-            _as_d(F.col("tbp_d")).alias("tbp"),
-            _as_d(F.col("tp")).alias("tpv"),
-            _as_d(F.col("tpp_d")).alias("tpp"),
+            as_d(F.col("xb")).alias("xb"),
+            as_d(F.col("xp")).alias("xp"),
+            as_d(F.col("xbp_d")).alias("xbp"),
+            as_d(F.col("xpp_d")).alias("xpp"),
+            as_d(F.col("tb")).alias("tb"),
+            as_d(F.col("tbp_d")).alias("tbp"),
+            as_d(F.col("tp")).alias("tpv"),
+            as_d(F.col("tpp_d")).alias("tpp"),
         )
     )
     ok = (
@@ -1540,7 +1464,8 @@ def fin_brinson_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_burke_ratio",
     tags=("finance", "window"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
         pk AS (
             SELECT d, xm,
                    MAX(xm) OVER (ORDER BY d
@@ -1602,7 +1527,7 @@ def fin_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     only unbounded-count float sum is thereby integerized. Burke is
     ONE guarded expression. No drawdowns (sq2 = 0) NULLs identically.
     The running-peak window is calendar-bounded (O(days))."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
     wd = Window.orderBy("d")  # calendar-bounded
     pk = mkt.select(
@@ -1629,7 +1554,7 @@ def fin_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.floor(
                 F.max(
-                    _as_d(F.col("peak") - F.col("xm")) / _as_d(F.col("peak"))
+                    as_d(F.col("peak") - F.col("xm")) / as_d(F.col("peak"))
                 )
                 * F.lit(1e9)
             ).cast("bigint").alias("q")
@@ -1637,14 +1562,14 @@ def fin_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dd = eps.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_episodes"),
-        _as_d(F.sum(F.col("q").cast("decimal(19,0)") * F.col("q"))).alias(
+        as_d(F.sum(F.col("q").cast("decimal(19,0)") * F.col("q"))).alias(
             "sq2"
         ),
     )
-    rm = _mkt_returns(spark, sf_dir)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
     mu = rm.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        _as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
     )
     sum_dd2 = F.col("sq2") / F.expr("CAST(1e18 AS DOUBLE)")
     return (
@@ -2001,7 +1926,7 @@ def ml_gini_feature_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_macro_f1",
     tags=("ml", "eval", "agg"),
-    oracle="""
+    oracle=f"""
         WITH rng AS (
             SELECT MIN(o_totalprice) AS pmin, MAX(o_totalprice) AS pmax
             FROM orders
@@ -2017,7 +1942,7 @@ def ml_gini_feature_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM orders CROSS JOIN rng
         ),
         binmaj AS (
-            SELECT bin, MAX({'cnt': cnt, 'cl': actual}).cl AS pred
+            SELECT bin, MAX({{'cnt': cnt, 'cl': actual}}).cl AS pred
             FROM (SELECT bin, actual, CAST(COUNT(*) AS BIGINT) AS cnt
                   FROM coded GROUP BY bin, actual)
             GROUP BY bin
@@ -2051,7 +1976,7 @@ def ml_gini_feature_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM perclass
         ),
         mac AS (
-            SELECT list_reduce(list(f1 ORDER BY cl), (a, x) -> a + x)
+            SELECT {o_ordered_fold_sum('cl', 'f1')}
                      / CAST(COUNT(*) AS DOUBLE) AS macro_f1
             FROM scored
         )
@@ -2154,7 +2079,7 @@ def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mac = scored.agg(
         (
-            _ordered_fold_sum(F.col("cl"), F.col("f1"))
+            ordered_fold_sum(F.col("cl"), F.col("f1"))
             / F.count(F.lit(1)).cast("double")
         ).alias("macro_f1")
     )
@@ -2174,7 +2099,7 @@ def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_average_precision_at_k",
     tags=("ml", "eval", "vector"),
-    oracle="""
+    oracle=f"""
         WITH q AS (
             SELECT embedding AS qe, label AS ql FROM embeddings
             WHERE vec_id = 0
@@ -2202,10 +2127,10 @@ def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(SUM(rel) AS BIGINT) AS n_relevant FROM scored
         ),
         ap AS (
-            SELECT list_reduce(
-                       list(CAST(rel AS DOUBLE) * (CAST(cum_rel AS DOUBLE)
-                                / CAST(rk AS DOUBLE)) ORDER BY rk),
-                       (a, x) -> a + x) AS num
+            SELECT {o_ordered_fold_sum(
+                'rk',
+                'CAST(rel AS DOUBLE) * (CAST(cum_rel AS DOUBLE) / CAST(rk AS DOUBLE))',
+            )} AS num
             FROM ranked WHERE rk <= 10
         )
         SELECT rtot.n_relevant,
@@ -2247,7 +2172,7 @@ def ml_average_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rtot = scored.agg(F.sum("rel").cast("bigint").alias("n_relevant"))
     ap = ranked.filter(F.col("rk") <= 10).agg(
-        _ordered_fold_sum(
+        ordered_fold_sum(
             F.col("rk"),
             F.col("rel").cast("double")
             * (F.col("cum_rel").cast("double") / F.col("rk").cast("double")),
@@ -2571,17 +2496,13 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_lpa_majority_2round — synchronous label propagation
 
 
-from finance_etl_spark.plans.curation import (  # noqa: E402
-    _GRAPH_EDGE_CTE,
-    _trade_edges_undirected,
-)
 
 
 @register(
     "graph_lpa_majority_2round",
     tags=("graph", "iterative", "window"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         l1 AS (
             SELECT v, lbl AS l1 FROM (
                 SELECT nbr.v, nbr.n AS lbl,
@@ -2620,7 +2541,7 @@ def graph_lpa_majority_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
     no floats anywhere. Scale: per round one shuffle on the node key
     of the neighbor relation; state between rounds is the |V|-row
     label relation."""
-    ku = _trade_edges_undirected(spark, sf_dir)
+    ku = trade_edges_undirected(spark, sf_dir)
     nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -2883,7 +2804,8 @@ def cur_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_cornish_fisher_var",
     tags=("finance", "stats"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
         r6 AS (
             SELECT CAST(FLOOR(CAST(m AS DOUBLE) / CAST(1e3 AS DOUBLE))
                         AS BIGINT) AS v
@@ -2965,7 +2887,7 @@ def fin_cornish_fisher_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically-parenthesized double expression with sqrt(m2)^3 (not
     libm pow). Zero variance NULLs all risk outputs identically. One
     scan, one 8-number agg."""
-    rm = _mkt_returns(spark, sf_dir)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
     r6 = rm.select(
         F.floor(F.col("m").cast("double") / F.expr("CAST(1e3 AS DOUBLE)"))
         .cast("bigint")
@@ -2981,16 +2903,16 @@ def fin_cornish_fisher_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     d28 = "decimal(28,0)"
     s = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _as_d(F.sum(F.col("v").cast("decimal(19,0)"))).alias("s1"),
-        _as_d(F.sum(v15 * F.col("v"))).alias("s2"),
-        _as_d(
+        as_d(F.sum(F.col("v").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(v15 * F.col("v"))).alias("s2"),
+        as_d(
             F.sum((v15 * F.col("v")).cast("decimal(23,0)") * F.col("v"))
         ).alias("s3"),
-        _as_d(F.sum((a * a * a * a).cast(d28))).alias("sa4"),
-        _as_d(F.sum((a * a * a * b).cast(d28))).alias("sa3b"),
-        _as_d(F.sum(((a * b) * (a * b)).cast(d28))).alias("sa2b2"),
-        _as_d(F.sum((a * b * b * b).cast(d28))).alias("sab3"),
-        _as_d(F.sum(((b * b) * (b * b)).cast(d28))).alias("sb4"),
+        as_d(F.sum((a * a * a * a).cast(d28))).alias("sa4"),
+        as_d(F.sum((a * a * a * b).cast(d28))).alias("sa3b"),
+        as_d(F.sum(((a * b) * (a * b)).cast(d28))).alias("sa2b2"),
+        as_d(F.sum((a * b * b * b).cast(d28))).alias("sab3"),
+        as_d(F.sum(((b * b) * (b * b)).cast(d28))).alias("sb4"),
     ).select(
         "n",
         "s1",
@@ -3044,7 +2966,8 @@ def fin_cornish_fisher_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_sterling_ratio",
     tags=("finance", "window"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
         pk AS (
             SELECT d, xm,
                    MAX(xm) OVER (ORDER BY d
@@ -3104,7 +3027,7 @@ def fin_sterling_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands episode machinery, q9-integerized episode depths
     so the across-episodes average is a ratio of exact integers. Zero
     drawdown NULLs identically. Running-peak window is O(days)."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
     wd = Window.orderBy("d")  # calendar-bounded
     pk = mkt.select(
@@ -3131,7 +3054,7 @@ def fin_sterling_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.floor(
                 F.max(
-                    _as_d(F.col("peak") - F.col("xm")) / _as_d(F.col("peak"))
+                    as_d(F.col("peak") - F.col("xm")) / as_d(F.col("peak"))
                 )
                 * F.lit(1e9)
             ).cast("bigint").alias("q")
@@ -3141,10 +3064,10 @@ def fin_sterling_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_episodes"),
         F.sum("q").cast("bigint").alias("sq"),
     )
-    rm = _mkt_returns(spark, sf_dir)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
     mu = rm.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        _as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
     )
     e9 = F.expr("CAST(1e9 AS DOUBLE)")
     avg_dd = F.col("sq").cast("double") / (
@@ -3173,8 +3096,9 @@ def fin_sterling_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_upside_potential_ratio",
     tags=("finance", "stats"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
-        {_SEG_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
         s AS (
             SELECT segment,
                    CAST(COUNT(*) AS BIGINT) AS n,
@@ -3211,14 +3135,14 @@ def fin_upside_potential_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; both population moments (/n, convention pinned) and the
     ratio are fixed single expressions. No negative days -> NULL
     identically. One scan on the shared return relation."""
-    daily = _seg_daily(spark, sf_dir)
-    rs = _seg_returns(daily)
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
     s = rs.groupBy("segment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when(F.col("r") > 0, F.col("r")).otherwise(0))
         .cast("bigint")
         .alias("up1"),
-        _as_d(
+        as_d(
             F.sum(
                 F.when(
                     F.col("r") < 0,
@@ -3342,7 +3266,7 @@ def stat_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     parts = cum.groupBy("n").agg(
-        _as_d(
+        as_d(
             F.sum(vdec * F.col("cnt")).cast("decimal(38,0)")
             - F.sum(vdec * bot_take).cast("decimal(38,0)")
             - F.sum(vdec * top_take).cast("decimal(38,0)")
@@ -3684,7 +3608,8 @@ def sql_quantified_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_arch_lm_screen",
     tags=("timeseries", "stats", "finance"),
     oracle=f"""
-        WITH {_MKT_RET_SQL},
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
         z AS (
             SELECT d,
                    CAST(FLOOR(CAST(m AS DOUBLE) / CAST(1e3 AS DOUBLE))
@@ -3757,7 +3682,7 @@ def ts_arch_lm_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically. Corpus work is the shared daily agg; the 4-lag join
     rides the calendar-bounded return relation x a broadcast 4-row
     spine."""
-    rm = _mkt_returns(spark, sf_dir)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
     zz = rm.select(
         "d",
         (
@@ -3780,11 +3705,11 @@ def ts_arch_lm_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     qb_dec = F.col("qb").cast("decimal(19,0)")
     suff = pairs.groupBy("k").agg(
         F.count(F.lit(1)).cast("bigint").alias("nk"),
-        _as_d(F.sum(qa_dec)).alias("sx"),
-        _as_d(F.sum(qb_dec)).alias("sy"),
-        _as_d(F.sum(qa_dec * F.col("qb"))).alias("sxy"),
-        _as_d(F.sum(qa_dec * F.col("qa"))).alias("sxx"),
-        _as_d(F.sum(qb_dec * F.col("qb"))).alias("syy"),
+        as_d(F.sum(qa_dec)).alias("sx"),
+        as_d(F.sum(qb_dec)).alias("sy"),
+        as_d(F.sum(qa_dec * F.col("qb"))).alias("sxy"),
+        as_d(F.sum(qa_dec * F.col("qa"))).alias("sxx"),
+        as_d(F.sum(qb_dec * F.col("qb"))).alias("syy"),
     )
     nk_d = F.col("nk").cast("double")
     vx = nk_d * F.col("sxx") - F.col("sx") * F.col("sx")

@@ -22,26 +22,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import (
+    as_d,
+    lsum,
+    o_lsum,
+    o_ordered_fold_sum,
+    ordered_fold_sum,
+)
 from finance_etl_spark.io.readers import load_table, load_table_parallel
+from finance_etl_spark.plans.recipes import (
+    EVENT_DAILY_RN_SQL,
+    SEG_DAILY_SQL,
+    STRONG_TRADE_CTE,
+    TOKENS_SQL,
+    event_daily_rn,
+    o_ret_q9,
+    seg_daily,
+    seg_returns,
+    tokens,
+    trade_pairs,
+)
 from finance_etl_spark.plans.registry import register
 
 
-def _as_d(c):
-    """Decimal -> double via the VARCHAR route (cross-engine exact)."""
-    return c.cast("string").cast("double")
-
-
-def _ordered_fold_sum(order_col, term_col):
-    """Pinned-order double sum (the round-12 recipe): collect
-    (order, term) structs, sort, fold from 0.0. DuckDB twin:
-    list_reduce(list(term ORDER BY order_col), (a, x) -> a + x)."""
-    return F.aggregate(
-        F.array_sort(
-            F.collect_list(F.struct(order_col.alias("o"), term_col.alias("t")))
-        ),
-        F.lit(0.0),
-        lambda acc, s: acc + s["t"],
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -232,7 +235,7 @@ def stat_uncertainty_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("decimal(12,6)")
         return counts.crossJoin(F.broadcast(tot)).agg(
             (
-                (-_as_d(F.sum(F.col(cname) * lnq)))
+                (-as_d(F.sum(F.col(cname) * lnq)))
                 / F.max("nt").cast("double")
             ).alias("h")
         )
@@ -429,12 +432,12 @@ def stat_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_2").cast("double").alias("n2d"),
         (F.col("n_1") + F.col("n_2")).cast("double").alias("npd"),
         *[
-            _as_d(F.col(f"{s}_{t}")).alias(f"{s}{t}")
+            as_d(F.col(f"{s}_{t}")).alias(f"{s}{t}")
             for t in ("1", "2")
             for s in ("sx", "sy", "sxx", "sxy", "syy")
         ],
         *[
-            _as_d(F.col(f"{s}_1") + F.col(f"{s}_2")).alias(f"{s}p")
+            as_d(F.col(f"{s}_1") + F.col(f"{s}_2")).alias(f"{s}p")
             for s in ("sx", "sy", "sxx", "sxy", "syy")
         ],
     )
@@ -532,7 +535,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_freq_sq"),
         (
             F.lit("10000.0").cast("double")
-            * _as_d(
+            * as_d(
                 F.sum(F.col("f").cast("decimal(38,0)") * F.col("f"))
                 - F.sum("f")
             )
@@ -550,14 +553,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_langid_confusion",
     tags=("text", "langid", "ml-eval"),
     oracle=f"""
-        WITH toks AS (
-            SELECT doc_id, pos, tok FROM (
-                SELECT doc_id,
-                       generate_subscripts(string_split(text, ' '), 1) AS pos,
-                       unnest(string_split(text, ' ')) AS tok
-                FROM documents
-            ) WHERE tok <> ''
-        ),
+        WITH toks AS ({TOKENS_SQL}),
         profile AS (
             SELECT d.lang, t.tok, COUNT(*) AS cnt
             FROM toks t JOIN documents d ON t.doc_id = d.doc_id
@@ -611,13 +607,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corpus work: the two profile aggs + one token join — identical to
     text_lang_id; the added confusion agg is language-grid-sized."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
+    toks = tokens(d)
     profile = (
         toks.join(d.select("doc_id", "lang"), "doc_id")
         .groupBy("lang", "tok")
@@ -666,14 +656,9 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_theil_u2",
     tags=("timeseries", "window", "agg"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) AS x,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_RN_SQL}
         ),
         lagged AS (
             SELECT event_type, rn,
@@ -691,10 +676,9 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_terms,
-               CASE WHEN list_reduce(list(den_t ORDER BY rn),
-                                     (a, x) -> a + x) > 0 THEN
-                 sqrt(list_reduce(list(num_t ORDER BY rn), (a, x) -> a + x))
-                 / sqrt(list_reduce(list(den_t ORDER BY rn), (a, x) -> a + x))
+               CASE WHEN {o_ordered_fold_sum('rn', 'den_t')} > 0 THEN
+                 sqrt({o_ordered_fold_sum('rn', 'num_t')})
+                 / sqrt({o_ordered_fold_sum('rn', 'den_t')})
                END AS theil_u2
         FROM terms GROUP BY event_type ORDER BY event_type
     """,
@@ -712,26 +696,14 @@ def ts_theil_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio-of-sqrts is one guarded expression. Corpus work: one
     map-side-combining daily agg; windows run over the 30-row series
     per type."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(18,6)")
-            .alias("x")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
+    daily = event_daily_rn(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("rn")
     lagged = daily.select(
         "event_type",
         "rn",
-        _as_d(F.col("x")).alias("xd"),
-        _as_d(F.lag("x", 1).over(w)).alias("l1"),
-        _as_d(F.lag("x", 7).over(w)).alias("l7"),
+        as_d(F.col("x")).alias("xd"),
+        as_d(F.lag("x", 1).over(w)).alias("l1"),
+        as_d(F.lag("x", 7).over(w)).alias("l7"),
     )
     terms = lagged.filter((F.col("rn") >= 8) & (F.col("l1") != 0)).select(
         "event_type",
@@ -747,8 +719,8 @@ def ts_theil_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = terms.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_terms"),
-        _ordered_fold_sum(F.col("rn"), F.col("num_t")).alias("num_s"),
-        _ordered_fold_sum(F.col("rn"), F.col("den_t")).alias("den_s"),
+        ordered_fold_sum(F.col("rn"), F.col("num_t")).alias("num_s"),
+        ordered_fold_sum(F.col("rn"), F.col("den_t")).alias("den_s"),
     )
     return (
         agg.select(
@@ -770,14 +742,9 @@ def ts_theil_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_stochastic_oscillator",
     tags=("timeseries", "window", "agg"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) AS x,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_RN_SQL}
         ),
         roll AS (
             SELECT event_type, rn,
@@ -806,8 +773,7 @@ def ts_theil_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_overbought,
                CAST(SUM(CASE WHEN pk < CAST('0.2' AS DOUBLE)
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_oversold,
-               CAST(SUM(CAST(FLOOR(pk * 1e6) AS BIGINT)) AS BIGINT)
-                   AS k_q6_sum,
+               {o_lsum('pk')} AS k_q6_sum,
                CAST(SUM(CASE WHEN k2 IS NOT NULL AND pk IS NOT NULL
                                   AND k1 IS NOT NULL AND k2 IS NOT NULL
                              THEN CAST(FLOOR(((pk + k1) + k2)
@@ -829,19 +795,7 @@ def ts_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation as floor-quantized q6 BIGINTs, so the per-series SUM
     is exact integer arithmetic. One map-side daily agg; windows over
     the 30-row series per type."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(18,6)")
-            .alias("x")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
+    daily = event_daily_rn(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
         .orderBy("rn")
@@ -850,10 +804,10 @@ def ts_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     roll = daily.select(
         "event_type",
         "rn",
-        _as_d(F.col("x")).alias("xd"),
+        as_d(F.col("x")).alias("xd"),
         F.count(F.lit(1)).over(w).cast("bigint").alias("wn"),
-        _as_d(F.min("x").over(w)).alias("lo"),
-        _as_d(F.max("x").over(w)).alias("hi"),
+        as_d(F.min("x").over(w)).alias("lo"),
+        as_d(F.max("x").over(w)).alias("hi"),
     )
     k = roll.filter(F.col("wn") == 14).select(
         "event_type",
@@ -886,9 +840,7 @@ def ts_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_oversold"),
-            F.sum(F.floor(F.col("pk") * 1e6).cast("bigint"))
-            .cast("bigint")
-            .alias("k_q6_sum"),
+            lsum(F.col("pk")).alias("k_q6_sum"),
             F.sum(
                 F.when(
                     F.col("pk").isNotNull()
@@ -916,23 +868,8 @@ def ts_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_edge_triangle_support",
     tags=("graph", "join"),
-    oracle="""
-        WITH e AS MATERIALIZED (
-            SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-                   CAST(COUNT(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY src, dst
-        ),
-        u AS MATERIALIZED (
-            SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
-                   CAST(SUM(w) AS BIGINT) AS w
-            FROM e WHERE src <> dst GROUP BY a, b
-        ),
-        thr AS MATERIALIZED (SELECT quantile_cont(w, 0.6) AS t FROM u),
-        ku AS MATERIALIZED (SELECT a, b FROM u, thr WHERE w >= t),
+    oracle=f"""
+        WITH {STRONG_TRADE_CTE},
         adj AS (
             SELECT a AS node, b AS nb FROM ku
             UNION ALL
@@ -966,24 +903,7 @@ def graph_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000-executor cluster partitions by vertex. Zero-support edges
     are kept via the left join (exactly the edges the 3-truss would
     drop first). All integers end-to-end."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    u = (
-        e.filter(F.col("src") != F.col("dst"))
-        .groupBy(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .agg(F.sum("w").alias("w"))
-    )
+    u = trade_pairs(spark, sf_dir)
     thr = u.agg(F.percentile("w", 0.6).alias("t"))
     ku = (
         u.crossJoin(F.broadcast(thr))
@@ -1017,7 +937,7 @@ def graph_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "window_dist_functions",
     tags=("window", "sql"),
-    oracle="""
+    oracle=f"""
         WITH base AS (
             SELECT o_orderpriority AS pri,
                    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
@@ -1041,8 +961,7 @@ def graph_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CASE WHEN cd <= CAST('0.25' AS DOUBLE)
                              THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_lower_quartile,
-               CAST(SUM(CAST(FLOOR(pr * 1e6) AS BIGINT)) AS BIGINT)
-                   AS pr_q6_sum,
+               {o_lsum('pr')} AS pr_q6_sum,
                CAST(MAX(third_cents) AS BIGINT) AS third_lowest_cents
         FROM win GROUP BY pri ORDER BY pri
     """,
@@ -1089,9 +1008,7 @@ def window_dist_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_lower_quartile"),
-            F.sum(F.floor(F.col("pr") * 1e6).cast("bigint"))
-            .cast("bigint")
-            .alias("pr_q6_sum"),
+            lsum(F.col("pr")).alias("pr_q6_sum"),
             F.max("third_cents").cast("bigint").alias("third_lowest_cents"),
         )
         .orderBy("pri")
@@ -1198,7 +1115,7 @@ def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_psi_stability",
     tags=("ml", "eval", "agg"),
-    oracle="""
+    oracle=f"""
         WITH base AS (
             SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
                        AS cents,
@@ -1243,13 +1160,10 @@ def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM cnts c CROSS JOIN tots t
         )
         SELECT t.n_ref, t.n_cur,
-               list_reduce(list(CAST(term AS DOUBLE) ORDER BY bin),
-                           (a, x) -> a + x) AS psi,
-               CASE WHEN list_reduce(list(CAST(term AS DOUBLE) ORDER BY bin),
-                                     (a, x) -> a + x)
+               {o_ordered_fold_sum('bin', 'CAST(term AS DOUBLE)')} AS psi,
+               CASE WHEN {o_ordered_fold_sum('bin', 'CAST(term AS DOUBLE)')}
                          < CAST('0.1' AS DOUBLE) THEN 'stable'
-                    WHEN list_reduce(list(CAST(term AS DOUBLE) ORDER BY bin),
-                                     (a, x) -> a + x)
+                    WHEN {o_ordered_fold_sum('bin', 'CAST(term AS DOUBLE)')}
                          < CAST('0.25' AS DOUBLE) THEN 'moderate_shift'
                     ELSE 'major_shift' END AS verdict
         FROM terms, tots t
@@ -1319,7 +1233,7 @@ def ml_psi_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin", "n_ref", "n_cur", term.alias("term")
     )
     agg = terms.groupBy("n_ref", "n_cur").agg(
-        _ordered_fold_sum(F.col("bin"), F.col("term")).alias("psi")
+        ordered_fold_sum(F.col("bin"), F.col("term")).alias("psi")
     )
     return agg.select(
         "n_ref",
@@ -1463,7 +1377,6 @@ def ml_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kupiec_sql() -> str:
-    from finance_etl_spark.plans.finance import _SEG_DAILY_SQL
 
     lnq = "CAST(ln({x}) AS DECIMAL(12,6))"
     l_p = lnq.format(x="CAST('0.05' AS DOUBLE)")
@@ -1475,13 +1388,10 @@ def _kupiec_sql() -> str:
         x="CAST(n_test - exceptions AS DOUBLE) / CAST(n_test AS DOUBLE)"
     )
     return f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         ret AS (
             SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
+                   {o_ret_q9('x', 'xp')} AS r
             FROM (SELECT segment, d, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
                   FROM daily)
@@ -1552,26 +1462,9 @@ def fin_kupiec_pof(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms by the standard 0 ln 0 = 0 convention, identically guarded
     on both engines. Rejection at the chi-square(1) 95% critical
     value (string-routed). Per-segment windows ride O(days) rows."""
-    from finance_etl_spark.plans.finance import _seg_daily
 
-    daily = _seg_daily(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    w = Window.partitionBy("segment").orderBy("d")
-    ret = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (as_d(F.col("x")) / as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-        .persist()
-    )
+    daily = seg_daily(spark, sf_dir)
+    ret = seg_returns(daily).persist()
     cut = F.lit("1998-01-01").cast("date")
     est = ret.filter(F.col("d") < cut)
     wr = Window.partitionBy("segment").orderBy("r", "d")

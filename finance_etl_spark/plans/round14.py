@@ -27,19 +27,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import as_d, o_fsum
 from finance_etl_spark.functions.vectors import cosine
 from finance_etl_spark.io.readers import load_table, load_table_parallel
-from finance_etl_spark.plans.curation import (
-    _GRAPH_EDGE_CTE,
-    _trade_edges_undirected,
+from finance_etl_spark.plans.recipes import (
+    DAILY_Q6_SQL,
+    GRAPH_EDGE_CTE,
+    PHI2_CELL_SQL,
+    SEG_DAILY_SQL,
+    daily_q6,
+    midranks2,
+    o_ret_q9,
+    phi2_cell,
+    seg_daily,
+    seg_returns,
+    trade_edges_undirected,
 )
 from finance_etl_spark.plans.registry import register
-from finance_etl_spark.plans.stats import _midranks2
 
-
-def _as_d(c):
-    """Decimal -> double via the VARCHAR route (cross-engine exact)."""
-    return c.cast("string").cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -193,7 +198,7 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and z is one shared expression parenthesized identically on both
     engines (sqrt is IEEE-correctly-rounded, so identical operands
     give identical bits). Distributed shape: pooled doubled midranks
-    via _midranks2 (value-bucket window + O(buckets) broadcast carry,
+    via midranks2 (value-bucket window + O(buckets) broadcast carry,
     exactly as stat_kruskal_wallis ranks this same column — never an
     unpartitioned global row sort); a row's u = 2*RANK + tiecount - 1
     equals the mr2 of its distinct value, so per-group rank sums come
@@ -205,7 +210,7 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("g"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("q"),
     )
-    rv = _midranks2(vals, "q", 10000)
+    rv = midranks2(vals, "q", 10000)
     grp = (
         vals.join(rv, vals.q == rv.v)
         .groupBy("g")
@@ -268,36 +273,13 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # shared daily q6-quantized event values (seasonal MK + Hampel)
 
-_DAILY_Q6_SQL = """
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT))
-                        AS BIGINT) AS v
-            FROM events GROUP BY event_type, d
-"""
-
-
-def _daily_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_type, d, v): daily per-type totals with each event value
-    floor-quantized to 1e-6 BEFORE the sum, so daily totals are exact
-    BIGINTs (order- and engine-independent) — the house cure for
-    summing raw doubles."""
-    e = load_table(spark, sf_dir, "events")
-    return e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 1e6).cast("bigint"))
-        .cast("bigint")
-        .alias("v")
-    )
-
-
 @register(
     "ts_seasonal_mann_kendall",
     tags=("timeseries", "stats"),
     oracle=f"""
         WITH daily AS MATERIALIZED (
             SELECT event_type, d, v, CAST(isodow(d) - 1 AS INT) AS wd
-            FROM ({_DAILY_Q6_SQL})
+            FROM ({DAILY_Q6_SQL})
         ),
         s_wd AS (
             SELECT a.event_type, a.wd,
@@ -353,7 +335,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair count is bounded at ~350^2 per season regardless of corpus
     size), keyed so a cluster partitions by (type, weekday). z is the
     single presentation expression (IEEE sqrt + one division)."""
-    daily = _daily_q6(spark, sf_dir).withColumn(
+    daily = daily_q6(spark, sf_dir).withColumn(
         "wd", F.weekday("d").cast("int")
     ).persist()
     a = daily.select(
@@ -436,7 +418,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window_hampel_filter",
     tags=("window", "timeseries", "dq"),
     oracle=f"""
-        WITH daily AS MATERIALIZED ({_DAILY_Q6_SQL}),
+        WITH daily AS MATERIALIZED ({DAILY_Q6_SQL}),
         w1 AS (
             SELECT event_type, d, v,
                    list(v) OVER (PARTITION BY event_type ORDER BY d
@@ -471,7 +453,7 @@ def window_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter. Distributed shape: one window over calendar-bounded daily
     aggregates partitioned by event_type; the frame sort is 7 elements
     per row — O(1) work per point, no global sort."""
-    daily = _daily_q6(spark, sf_dir)
+    daily = daily_q6(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -870,21 +852,21 @@ def ml_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.join(F.broadcast(ai), "lang")
         .join(F.broadcast(bj), "source")
         .crossJoin(F.broadcast(tot))
-        .agg(_as_d(F.sum(F.col("nij") * mi_ln)).alias("mi_n"))
+        .agg(as_d(F.sum(F.col("nij") * mi_ln)).alias("mi_n"))
     )
     hx_ln = F.log(
         F.col("ai").cast("double") / F.col("n").cast("double")
     ).cast("decimal(12,6)")
     hx_sum = (
         ai.crossJoin(F.broadcast(tot))
-        .agg((-_as_d(F.sum(F.col("ai") * hx_ln))).alias("hx_n"))
+        .agg((-as_d(F.sum(F.col("ai") * hx_ln))).alias("hx_n"))
     )
     hy_ln = F.log(
         F.col("bj").cast("double") / F.col("n").cast("double")
     ).cast("decimal(12,6)")
     hy_sum = (
         bj.crossJoin(F.broadcast(tot))
-        .agg((-_as_d(F.sum(F.col("bj") * hy_ln))).alias("hy_n"))
+        .agg((-as_d(F.sum(F.col("bj") * hy_ln))).alias("hy_n"))
     )
     nd = F.col("n").cast("double")
     mi = F.col("mi_n") / nd
@@ -915,7 +897,7 @@ def ml_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_ktruss_peel2",
     tags=("graph", "iterative"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         g0 AS MATERIALIZED (SELECT a, b FROM ku),
         adj0 AS (SELECT a AS node, b AS nb FROM g0
                  UNION ALL SELECT b AS node, a AS nb FROM g0),
@@ -962,7 +944,7 @@ def graph_ktruss_peel2(spark: SparkSession, sf_dir: str) -> DataFrame:
     recounted INSIDE the surviving subgraph. All integers; same
     corpus-relative 60th-percentile edge set as graph_triangle_count
     (the quantile threshold twin is the proven round-13 idiom)."""
-    g = _trade_edges_undirected(spark, sf_dir).persist()
+    g = trade_edges_undirected(spark, sf_dir).persist()
 
     def support(edges: DataFrame) -> DataFrame:
         adj = edges.select(
@@ -1144,21 +1126,11 @@ def vec_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_tail_ratio",
     tags=("finance", "window", "risk"),
-    oracle="""
-        WITH daily AS (
-            SELECT c.c_mktsegment AS segment,
-                   CAST(o.o_orderdate AS DATE) AS d,
-                   CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
-                        AS DECIMAL(18,2)) AS x
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
         ret AS (
             SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
+                   {o_ret_q9('x', 'xp')} AS r
             FROM (SELECT segment, d, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
                   FROM daily)
@@ -1201,37 +1173,8 @@ def fin_tail_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio NULLs when the 5th percentile is non-negative (no left
     tail — degenerate, documented). One rank window over
     calendar-bounded daily rows per segment."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-    )
-    w = Window.partitionBy("segment").orderBy("d")
-    ret = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
+    daily = seg_daily(spark, sf_dir)
+    ret = seg_returns(daily)
     w_lo = Window.partitionBy("segment").orderBy("r", "d")
     w_n = Window.partitionBy("segment")
     ranked = ret.select(
@@ -1460,7 +1403,7 @@ def dq_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_cramers_v_corrected",
     tags=("stats", "agg"),
-    oracle="""
+    oracle=f"""
         WITH cells AS (
             SELECT l_returnflag AS r, l_linestatus AS c,
                    CAST(COUNT(*) AS BIGINT) AS o
@@ -1476,17 +1419,7 @@ def dq_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
         tots AS (
             SELECT MAX(n) AS n,
                    COUNT(DISTINCT r) AS nrows, COUNT(DISTINCT c) AS ncols,
-                   CAST(CAST(SUM(CAST(FLOOR(
-                       (CAST(o AS DOUBLE) / CAST(n AS DOUBLE)
-                        - (CAST(nr AS DOUBLE) / CAST(n AS DOUBLE))
-                          * (CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)))
-                       * (CAST(o AS DOUBLE) / CAST(n AS DOUBLE)
-                        - (CAST(nr AS DOUBLE) / CAST(n AS DOUBLE))
-                          * (CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)))
-                       / ((CAST(nr AS DOUBLE) / CAST(n AS DOUBLE))
-                          * (CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)))
-                       * 1e15) AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
-                       / 1e15 AS phi2
+                   {o_fsum(PHI2_CELL_SQL, 15)} AS phi2
             FROM margins
         )
         SELECT CAST(n AS BIGINT) AS n,
@@ -1545,17 +1478,13 @@ def stat_cramers_v_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("o").over(wc).cast("bigint").alias("nc"),
         F.sum("o").over(wall).cast("bigint").alias("n"),
     )
-    po = F.col("o").cast("double") / F.col("n").cast("double")
-    pr = F.col("nr").cast("double") / F.col("n").cast("double")
-    pc = F.col("nc").cast("double") / F.col("n").cast("double")
-    contrib = (po - pr * pc) * (po - pr * pc) / (pr * pc)
     tots = m.agg(
         F.max("n").alias("n"),
         F.countDistinct("r").alias("nrows"),
         F.countDistinct("c").alias("ncols"),
         (
-            _as_d(
-                F.sum(F.floor(contrib * F.lit(1e15)).cast("decimal(38,0)"))
+            as_d(
+                F.sum(F.floor(phi2_cell() * F.lit(1e15)).cast("decimal(38,0)"))
             )
             / F.lit(1e15)
         ).alias("phi2"),
@@ -1724,7 +1653,7 @@ def stat_hypergeom_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ai",
         "bj",
         "n",
-        _as_d(lnp_dec).alias("log_p"),
+        as_d(lnp_dec).alias("log_p"),
     )
 
 
@@ -1849,10 +1778,10 @@ def stat_cvm_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = F.col("n").cast("double")
     w2 = (
         (
-            _as_d(F.col("a_sum")) / (m * m)
-            - _as_d(F.col("b_sum")) / (nd * m)
+            as_d(F.col("a_sum")) / (m * m)
+            - as_d(F.col("b_sum")) / (nd * m)
         )
-        + _as_d(F.col("c_sum")) / (F.lit(4).cast("double") * nd * nd)
+        + as_d(F.col("c_sum")) / (F.lit(4).cast("double") * nd * nd)
     ) + F.lit(1).cast("double") / (F.lit(12).cast("double") * nd)
     return sums.select(F.col("n").cast("bigint").alias("n"), w2.alias("w2_stat"))
 
@@ -1916,7 +1845,7 @@ def stat_ad_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("n"),
         F.sum(term).cast("decimal(38,6)").alias("s"),
     )
-    a2 = -F.col("n").cast("double") - _as_d(F.col("s")) / F.col("n").cast(
+    a2 = -F.col("n").cast("double") - as_d(F.col("s")) / F.col("n").cast(
         "double"
     )
     return sums.select(F.col("n").cast("bigint").alias("n"), a2.alias("a2_stat"))
@@ -1930,7 +1859,7 @@ def stat_ad_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_periodogram",
     tags=("timeseries", "stats"),
     oracle=f"""
-        WITH daily AS MATERIALIZED ({_DAILY_Q6_SQL}),
+        WITH daily AS MATERIALIZED ({DAILY_Q6_SQL}),
         idx AS (
             SELECT event_type, v,
                    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
@@ -1986,7 +1915,7 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     /1e12 undoes q6²). Distributed shape: windows and sums are
     per-event-type over CALENDAR-BOUNDED daily aggregates; the
     frequency grid is a 5-row literal broadcast."""
-    daily = _daily_q6(spark, sf_dir)
+    daily = daily_q6(spark, sf_dir)
     w = Window.partitionBy("event_type")
     idx = daily.select(
         "event_type",
@@ -2023,8 +1952,8 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = F.col("n").cast("double")
     power = (
-        (_as_d(F.col("sc")) * _as_d(F.col("sc"))
-         + _as_d(F.col("ss")) * _as_d(F.col("ss")))
+        (as_d(F.col("sc")) * as_d(F.col("sc"))
+         + as_d(F.col("ss")) * as_d(F.col("ss")))
         / (nd * nd * nd)
         / F.lit(1e12)
     )
@@ -2044,7 +1973,7 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_transitivity_global",
     tags=("graph", "join"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         wed AS (SELECT CAST(SUM((deg * (deg - 1)) // 2) AS BIGINT) AS wedges,
                        CAST(COUNT(*) AS BIGINT) AS n_nodes
                 FROM deg),
@@ -2073,7 +2002,7 @@ def graph_transitivity_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, input bounded by wedge count); the ratio is one guarded
     presentation division. Same corpus-relative 60th-percentile edge
     set as the rest of the graph family."""
-    ku = _trade_edges_undirected(spark, sf_dir).persist()
+    ku = trade_edges_undirected(spark, sf_dir).persist()
     adj = ku.select(F.col("a").alias("node"), F.col("b").alias("nb")).unionByName(
         ku.select(F.col("b").alias("node"), F.col("a").alias("nb"))
     )
@@ -2332,7 +2261,7 @@ def fin_cagr_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     lnq = lambda col: F.log(F.col(col).cast("double")).cast("decimal(12,6)")  # noqa: E731
     log_cagr = F.when(
         F.col("days") > 0,
-        _as_d(lnq("end_cents") - lnq("start_cents"))
+        as_d(lnq("end_cents") - lnq("start_cents"))
         * F.expr("CAST('365.25' AS DOUBLE)")
         / F.col("days").cast("double"),
     )

@@ -26,14 +26,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import as_d, fsum, o_fsum, o_ordered_fold_sum
 from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.plans.recipes import (
+    DAILY_Q6_SQL,
+    GRAPH_EDGE_CTE,
+    MARKET_MODEL_SQL,
+    SEG_DAILY_SQL,
+    SEG_RET_SQL,
+    TOKENS_SQL,
+    daily_q6,
+    dd_q6,
+    market_model_sums,
+    o_dd_q6,
+    seg_daily,
+    seg_returns,
+    tokens,
+    trade_edges_undirected,
+)
 from finance_etl_spark.plans.registry import register
-from finance_etl_spark.plans.round14 import _DAILY_Q6_SQL, _daily_q6
 
-
-def _as_d(c):
-    """Decimal -> double via the VARCHAR route (cross-engine exact)."""
-    return c.cast("string").cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -43,7 +55,7 @@ def _as_d(c):
 @register(
     "stat_moods_median",
     tags=("stats", "window"),
-    oracle="""
+    oracle=f"""
         WITH lab AS MATERIALIZED (
             SELECT o_orderpriority AS g,
                    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -105,7 +117,7 @@ def _as_d(c):
             FROM per CROSS JOIN pool
         ),
         chi AS (
-            SELECT list_reduce(list(t ORDER BY g), (a, x) -> a + x) AS chi2
+            SELECT {o_ordered_fold_sum('g', 't')} AS chi2
             FROM terms
         )
         SELECT tm.g, tm.ng AS n_g, tm.ag AS n_above, tm.eg AS exp_above,
@@ -119,7 +131,7 @@ def stat_moods_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     k x 2 table; chi-square against the independence expectation.
     Exactness: the pooled median is a pinned order statistic over
     exact integer cents (per-distinct-value counts, value-bucket
-    cumulative window + O(buckets) carry — the _midranks2
+    cumulative window + O(buckets) carry — the midranks2
     decomposition, never a global row sort; threshold (n+1) DIV 2
     twins DuckDB `//`); the k x 2 table is exact BIGINTs; each
     group's chi-square term is one double expression parenthesized
@@ -224,7 +236,7 @@ def stat_moods_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_bartels_rank_vn",
     tags=("stats", "timeseries", "window"),
     oracle=f"""
-        WITH daily AS ({_DAILY_Q6_SQL}),
+        WITH daily AS ({DAILY_Q6_SQL}),
         ranked AS (
             SELECT event_type, d,
                    2 * RANK() OVER (PARTITION BY event_type ORDER BY v)
@@ -272,8 +284,8 @@ def stat_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
     one double expression over integers. Distributed shape: windows
     partition per event type over CALENDAR-bounded daily rows (the
     Hampel/Friedman contract — days grow with time, not SF; the
-    corpus-scaled work is the one daily pre-agg in _daily_q6)."""
-    daily = _daily_q6(spark, sf_dir)
+    corpus-scaled work is the one daily pre-agg in daily_q6)."""
+    daily = daily_q6(spark, sf_dir)
     r2 = (
         F.lit(2)
         * F.rank().over(Window.partitionBy("event_type").orderBy("v"))
@@ -325,7 +337,7 @@ def stat_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_cox_stuart",
     tags=("timeseries", "stats"),
     oracle=f"""
-        WITH daily AS ({_DAILY_Q6_SQL}),
+        WITH daily AS ({DAILY_Q6_SQL}),
         idxed AS (
             SELECT event_type, v,
                    ROW_NUMBER() OVER (PARTITION BY event_type
@@ -367,7 +379,7 @@ def ts_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate. Distributed shape: per-type row_number windows over
     calendar-bounded daily rows; the half-offset pairing is an
     equi-join on (event_type, index) — never a cross pairing."""
-    daily = _daily_q6(spark, sf_dir)
+    daily = daily_q6(spark, sf_dir)
     w_t = Window.partitionBy("event_type").orderBy("d")
     w_all = Window.partitionBy("event_type")
     idxed = daily.select(
@@ -407,52 +419,16 @@ def ts_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # fin trio: Martin ratio, gain-to-pain, Jensen's alpha
-# (reuses finance.py's _seg_daily spine + the q9 return / q6 drawdown
+# (reuse the recipes.seg_daily spine + the q9 return / q6 drawdown
 # quantization recipes of fin_capm_beta / fin_ulcer_index)
-
-from finance_etl_spark.plans.finance import _SEG_DAILY_SQL, _seg_daily  # noqa: E402
-
-
-def _seg_q9_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(segment, d, r): day-over-day segment revenue returns floor-
-    quantized to q9 BIGINTs — the fin_capm_beta spine, shared."""
-    daily = _seg_daily(spark, sf_dir)
-    ws = Window.partitionBy("segment").orderBy("d")
-    return (
-        daily.withColumn("xp", F.lag("x").over(ws))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-
-
-_SEG_Q9_SQL = f"""
-            SELECT segment, d,
-                   CAST(FLOOR((CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS r
-            FROM (SELECT segment, d, x,
-                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
-                  FROM daily)
-            WHERE xp IS NOT NULL
-"""
 
 
 @register(
     "fin_gain_to_pain",
     tags=("finance", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
-        rs AS ({_SEG_Q9_SQL})
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {SEG_RET_SQL}
         SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(r) AS BIGINT) AS sum_r_q9,
                CAST(SUM(CASE WHEN r < 0 THEN -r ELSE 0 END) AS BIGINT)
@@ -474,7 +450,7 @@ def fin_gain_to_pain(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate NULLs both engines on an all-up segment). Distributed
     shape: one broadcast-join daily agg (corpus work) + per-segment
     lag windows on calendar-bounded rows + one k-segment hash agg."""
-    rs = _seg_q9_returns(spark, sf_dir)
+    rs = seg_returns(seg_daily(spark, sf_dir))
     pain = F.sum(F.when(F.col("r") < 0, -F.col("r")).otherwise(0))
     return rs.groupBy("segment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -490,32 +466,7 @@ def fin_gain_to_pain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_jensen_alpha",
     tags=("finance", "stats"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
-        mkt AS (
-            SELECT d, CAST(SUM(x) AS DECIMAL(18,2)) AS xm
-            FROM daily GROUP BY d
-        ),
-        rs AS ({_SEG_Q9_SQL}),
-        rm AS (
-            SELECT d,
-                   CAST(FLOOR((CAST(CAST(xm AS VARCHAR) AS DOUBLE)
-                               / CAST(CAST(xmp AS VARCHAR) AS DOUBLE)
-                               - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE))
-                        AS BIGINT) AS m
-            FROM (SELECT d, xm, LAG(xm) OVER (ORDER BY d) AS xmp FROM mkt)
-            WHERE xmp IS NOT NULL
-        ),
-        j AS (SELECT rs.segment, rs.r, rm.m FROM rs JOIN rm ON rm.d = rs.d),
-        s AS (
-            SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(r) AS BIGINT) AS sr,
-                   CAST(SUM(m) AS BIGINT) AS sm,
-                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * m) AS VARCHAR)
-                        AS DOUBLE) AS srm,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
-                        AS DOUBLE) AS smm
-            FROM j GROUP BY segment
-        )
+        WITH {MARKET_MODEL_SQL}
         SELECT segment, n,
                CASE WHEN CAST(n AS DOUBLE) * smm
                          - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) > 0 THEN
@@ -548,51 +499,8 @@ def fin_jensen_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to fin_capm_beta: corpus work is the daily agg; all
     windows on calendar-bounded rows; market series broadcast."""
     rf_d = 0.03 / 365  # 8.219178082191781e-05, literal-twinned above
-    daily = _seg_daily(spark, sf_dir).persist()
-    ws = Window.partitionBy("segment").orderBy("d")
-    rs = (
-        daily.withColumn("xp", F.lag("x").over(ws))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            "d",
-            F.floor(
-                (_as_d(F.col("x")) / _as_d(F.col("xp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    mkt = daily.groupBy("d").agg(
-        F.sum("x").cast("decimal(18,2)").alias("xm")
-    )
-    wm = Window.orderBy("d")
-    rm = (
-        mkt.withColumn("xmp", F.lag("xm").over(wm))
-        .filter(F.col("xmp").isNotNull())
-        .select(
-            "d",
-            F.floor(
-                (_as_d(F.col("xm")) / _as_d(F.col("xmp")) - F.lit(1.0))
-                * F.lit(1e9)
-            )
-            .cast("bigint")
-            .alias("m"),
-        )
-    )
-    j = rs.join(F.broadcast(rm), "d").select("segment", "r", "m")
-    s = j.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("r").cast("bigint").alias("sr"),
-        F.sum("m").cast("bigint").alias("sm"),
-        _as_d(
-            F.sum(F.col("r").cast("decimal(19,0)") * F.col("m"))
-        ).alias("srm"),
-        _as_d(
-            F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))
-        ).alias("smm"),
-    )
+    daily = seg_daily(spark, sf_dir).persist()
+    s = market_model_sums(daily)
     n_d = F.col("n").cast("double")
     sr_d = F.col("sr").cast("double")
     sm_d = F.col("sm").cast("double")
@@ -614,14 +522,10 @@ def fin_jensen_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fin_martin_ratio",
     tags=("finance", "window", "risk"),
     oracle=f"""
-        WITH daily AS ({_SEG_DAILY_SQL}),
+        WITH daily AS ({SEG_DAILY_SQL}),
         dd AS (
             SELECT segment, d, x,
-                   CAST(FLOOR((CAST(CAST(mx AS VARCHAR) AS DOUBLE)
-                               - CAST(CAST(x AS VARCHAR) AS DOUBLE))
-                              / CAST(CAST(mx AS VARCHAR) AS DOUBLE)
-                              * CAST(100 AS DOUBLE) * CAST(1e6 AS DOUBLE))
-                        AS BIGINT) AS ddq
+                   {o_dd_q6('mx', 'x')} AS ddq
             FROM (
                 SELECT segment, d, x,
                        MAX(x) OVER (PARTITION BY segment ORDER BY d
@@ -660,7 +564,7 @@ def fin_martin_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-peak segment NULLs both engines). Distributed shape: the
     fin_ulcer_index plan plus two arg-extremes in the same
     per-segment agg — windows on calendar-bounded rows only."""
-    daily = _seg_daily(spark, sf_dir)
+    daily = seg_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -668,18 +572,12 @@ def fin_martin_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "segment",
         "d",
         "x",
-        F.floor(
-            (_as_d(F.max("x").over(w)) - _as_d(F.col("x")))
-            / _as_d(F.max("x").over(w))
-            * F.lit(100.0)
-            * F.lit(1e6)
-        )
-        .cast("bigint")
+        dd_q6(F.max("x").over(w), F.col("x"))
         .alias("ddq"),
     )
     ulcer = (
         F.sqrt(
-            _as_d(
+            as_d(
                 F.sum(F.col("ddq").cast("decimal(19,0)") * F.col("ddq"))
                 .cast("decimal(38,0)")
             )
@@ -688,7 +586,7 @@ def fin_martin_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(1e6)
     )
     tot_ret = (
-        _as_d(F.max_by("x", "d")) / _as_d(F.min_by("x", "d"))
+        as_d(F.max_by("x", "d")) / as_d(F.min_by("x", "d"))
         - F.lit(1).cast("double")
     ) * F.lit(100).cast("double")
     per = dd.groupBy("segment").agg(
@@ -708,19 +606,17 @@ def fin_martin_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text readability pair (SMOG, ARI) + PMI collocations
-# (reuses text.py's token spine and the text_readability_fk counting
+# (reuse the recipes.tokens spine and the text_readability_fk counting
 # conventions: words = space-split non-empty, sentences = [.!?]+ runs
 # floored at 1, syllables = [aeiouy]+ vowel-group runs)
 
 from finance_etl_spark.io.readers import load_table_parallel  # noqa: E402
-from finance_etl_spark.plans.ml import _fsum  # noqa: E402
-from finance_etl_spark.plans.text import _TOKENS_SQL, _tokens  # noqa: E402
 
 
 @register(
     "text_smog_index",
     tags=("text", "quality", "agg"),
-    oracle="""
+    oracle=f"""
         WITH per_doc AS (
             SELECT lang,
                    CAST(len(list_filter(string_split(text, ' '),
@@ -743,8 +639,7 @@ from finance_etl_spark.plans.text import _TOKENS_SQL, _tokens  # noqa: E402
         SELECT lang,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(poly) AS BIGINT) AS total_polysyllables,
-               CAST(CAST(SUM(CAST(FLOOR(smog * 1e6) AS DECIMAL(38,0)))
-                    AS VARCHAR) AS DOUBLE) / 1e6
+               {o_fsum('smog')}
                  / CAST(COUNT(*) AS DOUBLE) AS mean_smog_grade
         FROM scored
         GROUP BY lang
@@ -820,7 +715,7 @@ def text_smog_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_ari_index",
     tags=("text", "quality", "agg"),
-    oracle="""
+    oracle=f"""
         WITH per_doc AS (
             SELECT lang,
                    CAST(len(list_filter(string_split(text, ' '),
@@ -843,8 +738,7 @@ def text_smog_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT lang,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(ch) AS BIGINT) AS total_alnum_chars,
-               CAST(CAST(SUM(CAST(FLOOR(ari * 1e6) AS DECIMAL(38,0)))
-                    AS VARCHAR) AS DOUBLE) / 1e6
+               {o_fsum('ari')}
                  / CAST(COUNT(*) AS DOUBLE) AS mean_ari_grade
         FROM scored
         GROUP BY lang
@@ -892,7 +786,7 @@ def text_ari_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("ch").cast("bigint").alias("total_alnum_chars"),
-            (_fsum(F.col("ari")) / F.count(F.lit(1)).cast("double")).alias(
+            (fsum(F.col("ari")) / F.count(F.lit(1)).cast("double")).alias(
                 "mean_ari_grade"
             ),
         )
@@ -904,7 +798,7 @@ def text_ari_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_pmi_bigrams",
     tags=("text", "collocation", "agg"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         uni AS MATERIALIZED (
             SELECT tok, CAST(COUNT(*) AS BIGINT) AS cx
             FROM toks GROUP BY tok
@@ -967,7 +861,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recompute per consumer; caching the exploded relation costs
     # more than the extra scan (no-persist 0.96 s vs both-persisted
     # 1.14 s min-of-3 at sf0.1 — the stat_moods_median finding)
-    toks = _tokens(d)
+    toks = tokens(d)
     uni = toks.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("cx")
     )
@@ -1021,7 +915,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cxy",
             "c1",
             "c2",
-            _as_d(F.col("pmi_q6")).alias("pmi"),
+            as_d(F.col("pmi_q6")).alias("pmi"),
         )
     )
 
@@ -1073,7 +967,7 @@ _BEN2_SQL_CASE = " ".join(
             FROM obs CROSS JOIN tot
         ),
         chi AS (
-            SELECT list_reduce(list(t ORDER BY d2), (a, x) -> a + x)
+            SELECT {o_ordered_fold_sum('d2', 't')}
                        AS chi2
             FROM terms
         )
@@ -1227,17 +1121,13 @@ def ml_balanced_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # graph_common_neighbors — link prediction on the trade graph
 
-from finance_etl_spark.plans.curation import (  # noqa: E402
-    _GRAPH_EDGE_CTE,
-    _trade_edges_undirected,
-)
 
 
 @register(
     "graph_common_neighbors",
     tags=("graph", "join"),
     oracle=f"""
-        WITH {_GRAPH_EDGE_CTE},
+        WITH {GRAPH_EDGE_CTE},
         cand AS (
             SELECT x.n AS a, y.n AS b, CAST(COUNT(*) AS BIGINT) AS cn
             FROM nbr x JOIN nbr y ON y.v = x.v AND x.n < y.n
@@ -1262,7 +1152,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT count. Same corpus-relative 60th-percentile edge set as
     the other round-9+ graph queries; corpus work is the one
     edge-build scan, graph state is nation-bounded."""
-    g = _trade_edges_undirected(spark, sf_dir).persist()
+    g = trade_edges_undirected(spark, sf_dir).persist()
     nbr = g.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
         g.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -1361,10 +1251,10 @@ def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         mean_d.alias("mean_value"),
         (
-            _as_d(F.col("sxlnx")) / F.col("sxc").cast("double") - ln_mean
+            as_d(F.col("sxlnx")) / F.col("sxc").cast("double") - ln_mean
         ).alias("theil_t"),
         (
-            ln_mean - _as_d(F.col("slnx")) / F.col("n").cast("double")
+            ln_mean - as_d(F.col("slnx")) / F.col("n").cast("double")
         ).alias("theil_l"),
     )
 
@@ -1377,7 +1267,7 @@ def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_spectral_entropy",
     tags=("timeseries", "stats"),
     oracle=f"""
-        WITH daily AS MATERIALIZED ({_DAILY_Q6_SQL}),
+        WITH daily AS MATERIALIZED ({DAILY_Q6_SQL}),
         idx AS (
             SELECT event_type, v,
                    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
@@ -1419,18 +1309,17 @@ def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         tot AS (
             SELECT event_type,
                    CAST(COUNT(*) AS BIGINT) AS n_freqs,
-                   list_reduce(list(p ORDER BY kf), (a, x) -> a + x)
+                   {o_ordered_fold_sum('kf', 'p')}
                        AS pt
             FROM pw GROUP BY event_type
         ),
         ent AS (
             SELECT pw.event_type, tot.n_freqs,
-                   list_reduce(
-                       list(-(pw.p / tot.pt)
-                            * CAST(CAST(ln(pw.p / tot.pt)
-                                   AS DECIMAL(12,6)) AS DOUBLE)
-                            ORDER BY pw.kf),
-                       (a, x) -> a + x) AS h
+                   {o_ordered_fold_sum(
+                       'pw.kf',
+                       '-(pw.p / tot.pt) * CAST(CAST(ln(pw.p / tot.pt) AS'
+                       ' DECIMAL(12,6)) AS DOUBLE)',
+                   )} AS h
             FROM pw JOIN tot ON tot.event_type = pw.event_type
             GROUP BY pw.event_type, tot.n_freqs
         )
@@ -1454,7 +1343,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python-generated double literal. Distributed shape identical to
     ts_periodogram: per-type calendar-bounded windows, 5-row literal
     frequency grid, k-type state."""
-    daily = _daily_q6(spark, sf_dir)
+    daily = daily_q6(spark, sf_dir)
     w = Window.partitionBy("event_type")
     idx = daily.select(
         "event_type",
@@ -1492,8 +1381,8 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = F.col("n").cast("double")
     power = (
         (
-            _as_d(F.col("sc")) * _as_d(F.col("sc"))
-            + _as_d(F.col("ss")) * _as_d(F.col("ss"))
+            as_d(F.col("sc")) * as_d(F.col("sc"))
+            + as_d(F.col("ss")) * as_d(F.col("ss"))
         )
         / (nd * nd * nd)
         / F.lit(1e12)
@@ -1518,7 +1407,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.col("kf"),
                             (
                                 -(F.col("p") / F.col("pt"))
-                                * _as_d(
+                                * as_d(
                                     F.log(F.col("p") / F.col("pt")).cast(
                                         "decimal(12,6)"
                                     )
@@ -1549,7 +1438,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_permutation_entropy",
     tags=("timeseries", "stats"),
     oracle=f"""
-        WITH daily AS ({_DAILY_Q6_SQL}),
+        WITH daily AS ({DAILY_Q6_SQL}),
         seq AS (
             SELECT event_type, v,
                    LEAD(v, 1) OVER (PARTITION BY event_type ORDER BY d)
@@ -1581,13 +1470,12 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ent AS (
             SELECT c.event_type, t.n,
-                   list_reduce(
-                       list(-(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))
-                            * CAST(CAST(ln(CAST(c.c AS DOUBLE)
-                                           / CAST(t.n AS DOUBLE))
-                                   AS DECIMAL(12,6)) AS DOUBLE)
-                            ORDER BY c.p),
-                       (a, x) -> a + x) AS h
+                   {o_ordered_fold_sum(
+                       'c.p',
+                       '-(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE)) *'
+                       ' CAST(CAST(ln(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE)) AS'
+                       ' DECIMAL(12,6)) AS DOUBLE)',
+                   )} AS h
             FROM cnt c JOIN tot t ON t.event_type = c.event_type
             GROUP BY c.event_type, t.n
         )
@@ -1611,7 +1499,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized-ln DECIMAL(12,6) shares; ln 6 enters as a Python-
     generated literal. Distributed shape: per-type LEAD windows over
     CALENDAR-bounded daily rows, k-type state."""
-    daily = _daily_q6(spark, sf_dir)
+    daily = daily_q6(spark, sf_dir)
     w_t = Window.partitionBy("event_type").orderBy("d")
     seq = daily.select(
         "event_type",
@@ -1637,7 +1525,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("bigint").alias("n")
     )
     share = F.col("c").cast("double") / F.col("n").cast("double")
-    term = -share * _as_d(F.log(share).cast("decimal(12,6)"))
+    term = -share * as_d(F.log(share).cast("decimal(12,6)"))
     ent = (
         cnt.join(tot, "event_type")
         .groupBy("event_type", "n")
@@ -1668,7 +1556,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_sample_entropy",
     tags=("timeseries", "stats"),
     oracle=f"""
-        WITH daily AS ({_DAILY_Q6_SQL}),
+        WITH daily AS ({DAILY_Q6_SQL}),
         seq AS (
             SELECT event_type, v,
                    LEAD(v, 1) OVER (PARTITION BY event_type ORDER BY d)
@@ -1742,7 +1630,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     index inequality as residual — per-type pair counts are
     CALENDAR-bounded (~days^2/2, SF-invariant), never corpus-scaled;
     corpus work is the one daily agg."""
-    daily = _daily_q6(spark, sf_dir)
+    daily = daily_q6(spark, sf_dir)
     w_t = Window.partitionBy("event_type").orderBy("d")
     tmpl = (
         daily.select(
@@ -1762,7 +1650,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ntd = F.col("nt").cast("double")
     rr = F.expr("CAST('0.2' AS DOUBLE)") * F.sqrt(
-        (ntd * _as_d(F.col("s2")) - F.col("s1").cast("double")
+        (ntd * as_d(F.col("s2")) - F.col("s1").cast("double")
          * F.col("s1").cast("double"))
         / (ntd * ntd)
     )
@@ -1799,7 +1687,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sampen = F.when(
         (F.col("a_cnt") > 0) & (F.col("b_cnt") > 0),
-        -_as_d(
+        -as_d(
             F.log(
                 F.col("a_cnt").cast("double") / F.col("b_cnt").cast("double")
             ).cast("decimal(12,6)")
@@ -1961,7 +1849,7 @@ def stat_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
             md
             * nmd
             * (
-                nd * _as_d(F.col(t2))
+                nd * as_d(F.col(t2))
                 - F.col(t1).cast("double") * F.col(t1).cast("double")
             )
             / (nd * nd * (F.col("n") - 1).cast("double"))
@@ -1985,7 +1873,7 @@ def stat_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_theil_decomposition",
     tags=("stats", "agg"),
-    oracle="""
+    oracle=f"""
         WITH base AS (
             SELECT c.c_mktsegment AS seg,
                    CAST(CAST(o.o_totalprice AS DECIMAL(12,2)) * 100
@@ -2025,11 +1913,11 @@ def stat_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         split AS (
             SELECT
-                list_reduce(list(share_g * t_g ORDER BY seg),
-                            (a, x) -> a + x) AS t_within,
-                list_reduce(list(share_g * CAST(ln_ratio AS DOUBLE)
-                                 ORDER BY seg),
-                            (a, x) -> a + x) AS t_between
+                {o_ordered_fold_sum('seg', 'share_g * t_g')} AS t_within,
+                {o_ordered_fold_sum(
+                    'seg',
+                    'share_g * CAST(ln_ratio AS DOUBLE)',
+                )} AS t_between
             FROM terms
         )
         SELECT tm.seg, tm.ng AS n_g, tm.mean_g, tm.t_g AS theil_within_g,
@@ -2083,7 +1971,7 @@ def stat_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(100).cast("double")
         / F.col("ng").cast("double")
     )
-    t_g = _as_d(F.col("sxlnx")) / F.col("sg").cast("double") - F.log(
+    t_g = as_d(F.col("sxlnx")) / F.col("sg").cast("double") - F.log(
         mean_g
     ).cast("decimal(12,6)")
     share_g = F.col("sg").cast("double") / F.col("s").cast("double")
@@ -2118,7 +2006,7 @@ def stat_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.struct(
                         F.col("seg"),
                         (
-                            F.col("share_g") * _as_d(F.col("ln_ratio"))
+                            F.col("share_g") * as_d(F.col("ln_ratio"))
                         ).alias("tb"),
                     )
                 )

@@ -26,7 +26,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import as_d, fsum, o_fsum, o_ordered_fold_sum
 from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.plans.recipes import (
+    DAILY_SCALED_SQL,
+    EVENT_DAILY_SQL,
+    PHI2_CELL_SQL,
+    daily_scaled,
+    event_daily,
+    midranks2,
+    ncdf_sql,
+    phi2_cell,
+)
 from finance_etl_spark.plans.registry import register
 
 # the two samples under test: order totals of URGENT vs LOW priority
@@ -622,40 +633,7 @@ def stat_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # power sums.
 
 
-def _midranks2(df: DataFrame, col: str, bucket_div: int) -> DataFrame:
-    """(v, mr2): doubled midrank per DISTINCT value of ``col``,
-    via within-bucket running counts plus an O(buckets) carry."""
-    per_val = (
-        df.groupBy(F.col(col).alias("v"))
-        .agg(F.count(F.lit(1)).alias("t"))
-        .withColumn("bkt", F.floor(F.col("v") / F.lit(bucket_div)).cast("long"))
-        .persist()
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = per_val.select(
-        "bkt", "v", "t", F.sum("t").over(w_in).alias("wc")
-    )
-    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        per_val.groupBy("bkt")
-        .agg(F.sum("t").alias("tb"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("tb").over(w_carry), F.lit(0)).alias("cb"),
-        )
-    )
-    return within.join(F.broadcast(carry), "bkt").select(
-        "v",
-        (
-            F.lit(2) * (F.col("wc") + F.col("cb") - F.col("t"))
-            + F.col("t")
-            + F.lit(1)
-        ).alias("mr2"),
-    )
+
 
 
 @register(
@@ -713,8 +691,8 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("decimal(12,2)").alias("x"),
         F.col("l_extendedprice").cast("decimal(12,2)").alias("y"),
     )
-    rx = _midranks2(base, "x", 10)
-    ry = _midranks2(base, "y", 10000)
+    rx = midranks2(base, "x", 10)
+    ry = midranks2(base, "y", 10000)
     dec = "decimal(38,0)"
     joined = (
         base.join(rx.withColumnRenamed("mr2", "mrx"), base.x == rx.v)
@@ -755,7 +733,7 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_cramers_v",
     tags=("stats", "agg"),
-    oracle="""
+    oracle=f"""
         WITH cells AS (
             SELECT o_orderpriority AS r, o_orderstatus AS c,
                    CAST(COUNT(*) AS BIGINT) AS o
@@ -771,17 +749,7 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         tots AS (
             SELECT MAX(n) AS n,
                    COUNT(DISTINCT r) AS nrows, COUNT(DISTINCT c) AS ncols,
-                   CAST(CAST(SUM(CAST(FLOOR(
-                       (CAST(o AS DOUBLE) / CAST(n AS DOUBLE)
-                        - (CAST(nr AS DOUBLE) / CAST(n AS DOUBLE))
-                          * (CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)))
-                       * (CAST(o AS DOUBLE) / CAST(n AS DOUBLE)
-                        - (CAST(nr AS DOUBLE) / CAST(n AS DOUBLE))
-                          * (CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)))
-                       / ((CAST(nr AS DOUBLE) / CAST(n AS DOUBLE))
-                          * (CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)))
-                       * 1e15) AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
-                       / 1e15 AS phi2
+                   {o_fsum(PHI2_CELL_SQL, 15)} AS phi2
             FROM margins
         )
         SELECT CAST(n AS BIGINT) AS n,
@@ -817,19 +785,11 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("o").over(wc).cast("bigint").alias("nc"),
         F.sum("o").over(wall).cast("bigint").alias("n"),
     )
-    po = F.col("o").cast("double") / F.col("n").cast("double")
-    pr = F.col("nr").cast("double") / F.col("n").cast("double")
-    pc = F.col("nc").cast("double") / F.col("n").cast("double")
-    contrib = (po - pr * pc) * (po - pr * pc) / (pr * pc)
     tots = m.agg(
         F.max("n").alias("n"),
         F.countDistinct("r").alias("nrows"),
         F.countDistinct("c").alias("ncols"),
-        (
-            F.sum(F.floor(contrib * F.lit(1e15)).cast("decimal(38,0)"))
-            .cast("double")
-            / F.lit(1e15)
-        ).alias("phi2"),
+        fsum(phi2_cell(), 15).alias("phi2"),
     )
     return tots.select(
         F.col("n").cast("bigint").alias("n"),
@@ -856,12 +816,8 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_runs_test",
     tags=("stats", "timeseries", "window", "agg"),
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   SUM(CAST(value AS DECIMAL(18,6))) AS x
-            FROM events GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({EVENT_DAILY_SQL}),
         moves AS (
             SELECT event_type, d,
                    CASE WHEN x > LAG(x) OVER w THEN 1
@@ -910,10 +866,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(days) rows; O(series) output. Too-few runs = trending, too many
     = mean-reverting — the cheap first screen before fitting AR
     structure (ts_pacf / ts_yule_walker_ar2)."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("x"))
+    daily = event_daily(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("d")
     moves = daily.select(
         "event_type",
@@ -1241,7 +1194,7 @@ def stat_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_anova_oneway",
     tags=("stats", "agg", "hypothesis"),
-    oracle="""
+    oracle=f"""
         WITH lab AS (
             SELECT o_orderpriority AS g,
                    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -1261,10 +1214,10 @@ def stat_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(n) AS BIGINT) AS nn,
                    CAST(SUM(s) AS BIGINT) AS ss,
                    CAST(CAST(SUM(q) AS VARCHAR) AS DOUBLE) AS q_d,
-                   list_reduce(
-                       list(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                            / CAST(n AS DOUBLE) ORDER BY g),
-                       (a, x) -> a + x) AS b
+                   {o_ordered_fold_sum(
+                       'g',
+                       'CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)',
+                   )} AS b
             FROM per
         )
         SELECT k, nn AS n_total,
@@ -1355,7 +1308,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_jackknife_ratio_se",
     tags=("stats", "agg", "resampling"),
-    oracle="""
+    oracle=f"""
         WITH lab AS (
             SELECT l_returnflag AS g,
                    CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
@@ -1380,10 +1333,8 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT g, CAST(MIN(n) AS BIGINT) AS n,
                    CAST(MIN(sy) AS DOUBLE) / CAST(MIN(sx) AS DOUBLE)
                        AS ratio,
-                   CAST(CAST(SUM(CAST(FLOOR(d * 1e6) AS DECIMAL(38,0)))
-                        AS VARCHAR) AS DOUBLE) / 1e6 AS sd,
-                   CAST(CAST(SUM(CAST(FLOOR(d * d * 1e6)
-                        AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1e6
+                   {o_fsum('d')} AS sd,
+                   {o_fsum('d * d')}
                        AS sdd
             FROM dev GROUP BY g
         )
@@ -1408,7 +1359,6 @@ def stat_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride the floor-scale DECIMAL(38,0) recipe, so the reduction is
     order-free and engine-exact. Scale: one corpus scan, a 3-row
     broadcast, map-side-combining aggregates; nothing widens."""
-    from finance_etl_spark.plans.ml import _fsum
 
     li = load_table(spark, sf_dir, "lineitem")
     lab = li.select(
@@ -1437,8 +1387,8 @@ def stat_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.min("sy").cast("double") / F.min("sx").cast("double")
             ).alias("ratio"),
-            _fsum(F.col("d")).alias("sd"),
-            _fsum(F.col("d") * F.col("d")).alias("sdd"),
+            fsum(F.col("d")).alias("sd"),
+            fsum(F.col("d") * F.col("d")).alias("sdd"),
         )
     )
     nd = F.col("n").cast("double")
@@ -1539,7 +1489,7 @@ def stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_levene_brown_forsythe",
     tags=("stats", "agg", "hypothesis"),
-    oracle="""
+    oracle=f"""
         WITH lab AS (
             SELECT o_orderpriority AS g,
                    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -1578,10 +1528,10 @@ def stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(n) AS BIGINT) AS nn,
                    CAST(SUM(s) AS BIGINT) AS ss,
                    CAST(CAST(SUM(q) AS VARCHAR) AS DOUBLE) AS q_d,
-                   list_reduce(
-                       list(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                            / CAST(n AS DOUBLE) ORDER BY g),
-                       (a, x) -> a + x) AS b
+                   {o_ordered_fold_sum(
+                       'g',
+                       'CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)',
+                   )} AS b
             FROM per
         )
         SELECT k, nn AS n_total,
@@ -1830,21 +1780,21 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tq))
         .crossJoin(F.broadcast(td))
     )
-    as_d = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
     nd_ = F.col("n").cast("double")
     n0 = nd_ * (nd_ - F.lit(1.0)) / F.lit(2.0)
     return j.select(
         "n",
-        as_d("nc").alias("n_concordant"),
-        as_d("nd").alias("n_discordant"),
-        (as_d("t2q") / F.lit(2.0)).alias("ties_x"),
-        (as_d("t2d") / F.lit(2.0)).alias("ties_y"),
+        as_d(F.col("nc")).alias("n_concordant"),
+        as_d(F.col("nd")).alias("n_discordant"),
+        (as_d(F.col("t2q")) / F.lit(2.0)).alias("ties_x"),
+        (as_d(F.col("t2d")) / F.lit(2.0)).alias("ties_y"),
         F.when(
-            (n0 > as_d("t2q") / F.lit(2.0)) & (n0 > as_d("t2d") / F.lit(2.0)),
-            (as_d("nc") - as_d("nd"))
+            (n0 > as_d(F.col("t2q")) / F.lit(2.0))
+            & (n0 > as_d(F.col("t2d")) / F.lit(2.0)),
+            (as_d(F.col("nc")) - as_d(F.col("nd")))
             / F.sqrt(
-                (n0 - as_d("t2q") / F.lit(2.0))
-                * (n0 - as_d("t2d") / F.lit(2.0))
+                (n0 - as_d(F.col("t2q")) / F.lit(2.0))
+                * (n0 - as_d(F.col("t2d")) / F.lit(2.0))
             ),
         ).alias("tau_b"),
     )
@@ -1854,7 +1804,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kruskal-Wallis H (round 9): the k-sample rank ANOVA — "do any of the
 # k priority cohorts differ in order value?" without normality
 # assumptions. Midranks come from the same scale-safe distinct-value
-# decomposition as Spearman (_midranks2: per-bucket window + O(buckets)
+# decomposition as Spearman (midranks2: per-bucket window + O(buckets)
 # carry — never a global unpartitioned sort); per-group rank sums stay
 # exact DECIMAL(38,0); the k per-group R_j^2/n_j terms are folded in
 # group-key order via the sorted-array reduce (the ANOVA recipe) so
@@ -1865,7 +1815,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_kruskal_wallis",
     tags=("stats", "window", "agg"),
-    oracle="""
+    oracle=f"""
         WITH base AS (
             SELECT o_orderpriority AS g,
                    CAST(o_totalprice AS DECIMAL(12,2)) AS x
@@ -1893,7 +1843,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         red AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS k,
                    CAST(SUM(nj) AS BIGINT) AS n,
-                   list_reduce(list(tj ORDER BY g), (a, x) -> a + x) AS t_sum
+                   {o_ordered_fold_sum('g', 'tj')} AS t_sum
             FROM terms
         ),
         ties AS (
@@ -1922,7 +1872,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis H across the five order-priority cohorts on
-    order value. Pooled midranks via _midranks2 (value-bucket window +
+    order value. Pooled midranks via midranks2 (value-bucket window +
     broadcast carry — rank work scales with DISTINCT values per
     bucket, not corpus rows); per-group rank sums are exact
     DECIMAL(38,0); R_j^2/n_j casts the exact sum to double through the
@@ -1936,7 +1886,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("g"),
         F.col("o_totalprice").cast("decimal(12,2)").alias("x"),
     )
-    rv = _midranks2(base, "x", 10000)
+    rv = midranks2(base, "x", 10000)
     per = (
         base.join(rv, base.x == rv.v)
         .groupBy("g")
@@ -2090,7 +2040,6 @@ def stat_chi2_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 20 * m * p_q9 <= i * 1e9 (alpha = 0.05) — no float comparisons
 # anywhere in the decision path.
 
-from finance_etl_spark.plans.finance import _ncdf_sql  # noqa: E402
 
 
 @register(
@@ -2131,7 +2080,7 @@ from finance_etl_spark.plans.finance import _ncdf_sql  # noqa: E402
         ps AS (
             SELECT nation, nj, z, m,
                    CAST(FLOOR(CAST(2 AS DOUBLE)
-                        * (CAST(1 AS DOUBLE) - {_ncdf_sql('abs(z)')})
+                        * (CAST(1 AS DOUBLE) - {ncdf_sql('abs(z)')})
                         * CAST(1e9 AS DOUBLE)) AS BIGINT) AS p_q9
             FROM zs
         ),
@@ -2219,7 +2168,7 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m",
         F.floor(
             F.lit(2.0)
-            * (F.lit(1.0) - F.expr(_ncdf_sql("abs(z)")))
+            * (F.lit(1.0) - F.expr(ncdf_sql("abs(z)")))
             * F.lit(1e9)
         )
         .cast("bigint")
@@ -2312,7 +2261,6 @@ def stat_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("decimal(20,2)").alias("y"),
         F.col("l_discount").cast("decimal(20,2)").alias("z"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     wide = lambda c: F.col(c).cast("decimal(21,2)")  # noqa: E731
     s = feat.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -2443,7 +2391,6 @@ def stat_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("xc"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = lab.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("xc").cast("bigint").alias("sx"),
@@ -2578,7 +2525,6 @@ def stat_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("xq"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     cells = lab.groupBy("treated", "post").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("xq").cast("bigint").alias("s"),
@@ -2702,7 +2648,6 @@ def stat_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("rev_cents"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = per_cust.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("n_orders").cast("bigint").alias("sx"),
@@ -2864,7 +2809,6 @@ def stat_ttest_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("post"),
     )
     d = per_cust.select((F.col("post") - F.col("pre")).alias("diff"))
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("diff").cast("bigint").alias("sd_"),
@@ -3092,7 +3036,6 @@ def stat_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same CASE on both engines; decimal sums present through the
     VARCHAR-routed double edge."""
     cust = load_table(spark, sf_dir, "customer")
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     bal = F.col("c_acctbal").cast("decimal(12,2)")
     s = cust.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3128,15 +3071,8 @@ def stat_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BEFORE summing (exact DECIMAL(38,0) integer sums — order- and
 # engine-free), per registry divergence class 1.
 
-_DAILY_EVENTS_SQL = """
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(FLOOR(value * 1e6) AS DECIMAL(38,0)))
-                        AS BIGINT) AS v
-            FROM events GROUP BY 1, 2
-"""
-
 _RESID_CTES = f"""
-        daily AS ({_DAILY_EVENTS_SQL}),
+        daily AS ({DAILY_SCALED_SQL}),
         base AS (
             SELECT event_type,
                    CAST(date_diff('day', DATE '2024-01-01', day) AS BIGINT)
@@ -3182,14 +3118,7 @@ def _ols_daily_resid(spark: SparkSession, sf_dir: str):
     exact-integer series plus the per-type coefficient relation.
     Corpus work is ONE map-side-combining (type, day) agg; everything
     downstream runs on O(types x days) rows, coefficients broadcast."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("value") * F.lit(1e6)).cast("decimal(38,0)"))
-        .cast("bigint")
-        .alias("v")
-    )
+    daily = daily_scaled(spark, sf_dir)
     base = daily.select(
         "event_type",
         F.datediff(F.col("day"), F.lit("2024-01-01").cast("date"))
@@ -3197,7 +3126,6 @@ def _ols_daily_resid(spark: SparkSession, sf_dir: str):
         .alias("t"),
         "v",
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     suff = base.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("t").cast("bigint").alias("st"),
@@ -3276,7 +3204,6 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs DW via the same CASE; a single-day series NULLs beta via
     NULLIF upstream."""
     resid, coef = _ols_daily_resid(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     qr = resid.select(
         "event_type", "t", F.floor(F.col("e")).cast("bigint").alias("ef")
     )
@@ -3375,7 +3302,6 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized series) NULLs both outputs via the same CASE on both
     engines."""
     resid, _ = _ols_daily_resid(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     q = resid.select(
         "event_type",
         "t",
@@ -3493,7 +3419,6 @@ def stat_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = dd.select(
         "d", F.sum("w").over(wcum).cast("decimal(38,0)").alias("cw")
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     return cum.crossJoin(F.broadcast(tot)).agg(
         as_d(F.min(F.col("t"))).alias("n_pairs"),
         as_d(
@@ -3556,7 +3481,7 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend (the nonparametric twin of stat_ttest_paired — no normality
     assumption, and the third member of the paired family with
     stat_mcnemar): zero diffs drop per convention, |diff| midranks
-    come from the scale-safe distinct-value decomposition (_midranks2
+    come from the scale-safe distinct-value decomposition (midranks2
     shape — per-bucket window + O(buckets) carry, never a global
     unpartitioned rank), W+ accumulates exact DECIMAL doubled
     midranks, and the tie-corrected normal z (no continuity
@@ -3580,8 +3505,7 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ad", F.abs(F.col("diff")))
         .persist()  # consumed by the rank join AND the tie sum
     )
-    rv = _midranks2(d, "ad", 1000000)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    rv = midranks2(d, "ad", 1000000)
     s = d.join(rv, d.ad == rv.v).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(
@@ -3618,13 +3542,8 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_friedman_test",
     tags=("stats", "window", "agg"),
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(FLOOR(value * 1e6) AS DECIMAL(38,0)))
-                        AS BIGINT) AS v
-            FROM events GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({DAILY_SCALED_SQL}),
         ranked AS (
             SELECT event_type, day,
                    2 * (RANK() OVER (PARTITION BY day ORDER BY v))
@@ -3648,10 +3567,10 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CASE WHEN dims.n = dims.mx THEN
                    12 / (CAST(dims.n AS DOUBLE) * CAST(dims.k AS DOUBLE)
                          * (CAST(dims.k AS DOUBLE) + 1))
-                     * list_reduce(
-                           list(CAST(rj.r2j AS DOUBLE) * CAST(rj.r2j AS DOUBLE)
-                                / 4 ORDER BY rj.event_type),
-                           (a, x) -> a + x)
+                     * {o_ordered_fold_sum(
+                         'rj.event_type',
+                         'CAST(rj.r2j AS DOUBLE) * CAST(rj.r2j AS DOUBLE) / 4',
+                     )}
                      - 3 * CAST(dims.n AS DOUBLE)
                        * (CAST(dims.k AS DOUBLE) + 1) END AS q_stat
             FROM rj CROSS JOIN dims
@@ -3675,14 +3594,7 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrades to NULL identically on both engines instead of silently
     mixing unequal block counts into Q. No division by data (class-5:
     denominators are k,n counts >= 1)."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("value") * F.lit(1e6)).cast("decimal(38,0)"))
-        .cast("bigint")
-        .alias("v")
-    )
+    daily = daily_scaled(spark, sf_dir)
     wd = Window.partitionBy("day").orderBy("v")
     wt = Window.partitionBy("day", "v")
     ranked = daily.select(
@@ -3795,7 +3707,6 @@ def stat_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("a").cast("bigint").alias("n"),
         F.sum("b").cast("bigint").alias("m"),
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     terms = cum.crossJoin(F.broadcast(tot)).select(
         F.abs(F.col("cum_a") * F.col("m") - F.col("cum_b") * F.col("n"))
         .cast("bigint")
@@ -3978,7 +3889,6 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals (the NPV decimal-literal lesson). Class-5: se=0 NULLs all
     three outputs identically on both engines."""
     o = load_table(spark, sf_dir, "orders")
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     p = F.col("o_totalprice").cast("decimal(12,2)")
     is1 = F.col("o_orderpriority") == "1-URGENT"
     is2 = F.col("o_orderpriority") == "5-LOW"
@@ -4062,7 +3972,6 @@ def stat_hartley_fmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a constant cohort) NULLs the ratio identically on both engines.
     Only k model-sized rows exist after the scan."""
     o = load_table(spark, sf_dir, "orders")
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     p = F.col("o_totalprice").cast("decimal(12,2)")
     s = o.groupBy(F.col("o_orderpriority").alias("g")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

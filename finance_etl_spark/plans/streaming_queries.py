@@ -20,9 +20,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import dsum
+from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.recipes import EVENT_DAILY_XQ_SQL
+from finance_etl_spark.plans.registry import register
 
 
 @register(
@@ -486,7 +487,7 @@ def stream_live_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "stream_live_python_source",
     tags=("streaming", "live", "source", "spark4"),
-    oracle="""
+    oracle=f"""
         WITH ticks AS (
             SELECT i AS tick_id,
                    TIMESTAMP '2024-01-01' + i * INTERVAL 1 SECOND AS ts,
@@ -496,7 +497,7 @@ def stream_live_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         SELECT CAST(date_trunc('minute', ts) AS TIMESTAMP) AS bar_minute,
                COUNT(*) AS n_ticks,
                MIN(px) AS low, MAX(px) AS high,
-               CAST(CAST(SUM(CAST(px AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+               {o_dsum('px')}
                  AS px_volume
         FROM ticks GROUP BY bar_minute
     """,
@@ -978,12 +979,11 @@ def stream_live_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_live_observed_metrics",
     tags=("streaming", "live", "observability"),
-    oracle="""
+    oracle=f"""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(COUNT(DISTINCT user_id) IS NOT NULL AS BOOLEAN)
                    AS metrics_reported,
-               CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR)
-                    AS DOUBLE) AS total_value
+               {o_dsum('value')} AS total_value
         FROM events
     """,
 )
@@ -1455,14 +1455,9 @@ def stream_live_perplexity_admission(
     return spark.read.parquet(sink).orderBy("new_id")
 
 
-_CUSUM_ALARM_ORACLE = """
+_CUSUM_ALARM_ORACLE = f"""
         WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xq,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_XQ_SQL}
         ),
         pre AS (
             SELECT event_type, d, rn, xq,

@@ -31,9 +31,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import dsum
+from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.registry import register
 
 
 def _norm_stat(v):
@@ -764,7 +764,10 @@ def sink_multi_table_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
         UNION ALL
         SELECT 'post_update', CAST(COUNT(*) AS BIGINT),
-               {o_dsum("CASE WHEN CAST(o_orderdate AS DATE) BETWEEN DATE '1995-06-01' AND DATE '1995-06-30' THEN o_totalprice * 1.1 ELSE o_totalprice END")}
+               {o_dsum(
+                   "CASE WHEN CAST(o_orderdate AS DATE) BETWEEN DATE '1995-06-01' AND"
+                   " DATE '1995-06-30' THEN o_totalprice * 1.1 ELSE o_totalprice END",
+               )}
         FROM orders
         ORDER BY snapshot DESC
     """,

@@ -15,8 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import fsum, o_fsum
 from finance_etl_spark.io.readers import load_table, load_table_parallel
 from finance_etl_spark.operators.ranks import global_rank_running_sums
+from finance_etl_spark.plans.recipes import TOKENS_SQL, tokens
 from finance_etl_spark.plans.registry import register
 
 # Token = non-empty run split on single spaces; the fixture corpus is
@@ -26,27 +28,6 @@ _SPACE = " "
 # Tiny stopword list used by the quality score; part of the declared
 # semantics, not a linguistic claim.
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
-
-
-def _tokens(df: DataFrame) -> DataFrame:
-    """(doc_id, pos, tok) — exploded non-empty tokens."""
-    return (
-        df.select(
-            "doc_id",
-            F.posexplode(F.split(F.col("text"), _SPACE)).alias("pos", "tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-
-
-_TOKENS_SQL = """
-        SELECT doc_id, pos, tok FROM (
-            SELECT doc_id,
-                   generate_subscripts(string_split(text, ' '), 1) AS pos,
-                   unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ) WHERE tok <> ''
-"""
 
 
 @register(
@@ -79,7 +60,7 @@ def text_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_stats",
     tags=("text", "agg"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL})
+        WITH toks AS ({TOKENS_SQL})
         SELECT tok, COUNT(*) AS n_occurrences,
                COUNT(DISTINCT doc_id) AS doc_freq
         FROM toks GROUP BY tok HAVING COUNT(*) >= 100
@@ -90,7 +71,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode shuffles once on the token — the canonical word-count."""
     d = load_table_parallel(spark, sf_dir, "documents")
     return (
-        _tokens(d)
+        tokens(d)
         .groupBy("tok")
         .agg(
             F.count(F.lit(1)).alias("n_occurrences"),
@@ -104,7 +85,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_ngram_stats",
     tags=("text", "agg"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         bigrams AS (
             SELECT doc_id,
                    tok || ' ' || lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS bigram
@@ -119,7 +100,7 @@ def text_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-bigram frequencies via posexplode + lead window; the window
     partitions per document so no global sort exists."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d)
+    toks = tokens(d)
     w = Window.partitionBy("doc_id").orderBy("pos")
     bigrams = toks.select(
         F.concat_ws(" ", F.col("tok"), F.lead("tok").over(w)).alias("bigram"),
@@ -136,7 +117,7 @@ def text_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality_score",
     tags=("text", "quality"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         per_doc AS (
             SELECT doc_id, COUNT(*) AS n_tokens,
                    SUM(length(tok)) AS n_token_chars,
@@ -158,7 +139,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. One explode + one hash agg; joins back on doc_id."""
     d = load_table_parallel(spark, sf_dir, "documents")
     per_doc = (
-        _tokens(d)
+        tokens(d)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -248,7 +229,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_ngram_jaccard_pairs",
     tags=("text", "dedup", "similarity"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         sh AS (
             SELECT DISTINCT doc_id,
                    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
@@ -503,7 +484,7 @@ def _simhash_oracle() -> str:
         f"(CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(_SIMHASH_BITS)
     )
     return f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         bits AS (
             SELECT doc_id,
                    {sums}
@@ -520,7 +501,7 @@ def text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates can be bucketed by fingerprint bands — one explode +
     one hash agg, no pairwise work at all."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d)
+    toks = tokens(d)
     h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     sums = [
         F.sum(
@@ -540,7 +521,7 @@ def text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_lang_id",
     tags=("text", "langid"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         profile AS (
             SELECT d.lang, t.tok, COUNT(*) AS cnt
             FROM toks t JOIN documents d ON t.doc_id = d.doc_id
@@ -577,7 +558,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dataflow: two hash aggs to build profiles + one token-key join —
     profiles are corpus-wide aggregates, never broadcast state."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d)
+    toks = tokens(d)
     profile = (
         toks.join(d.select("doc_id", "lang"), "doc_id")
         .groupBy("lang", "tok")
@@ -607,7 +588,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_tfidf",
     tags=("text", "tfidf"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
         df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
         n AS (SELECT COUNT(*) AS n_docs FROM documents)
@@ -624,7 +605,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     because ln() is libm-dependent (~1 ulp spread) — the integer tf/df
     columns carry the exact contract."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d)
+    toks = tokens(d)
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = d.count()  # driver-side scalar: one number, not row data
@@ -729,7 +710,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition_filter",
     tags=("text", "quality", "curation"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         bg AS (
             SELECT t1.doc_id, t1.tok || ' ' || t2.tok AS bigram
             FROM toks t1
@@ -810,7 +791,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_unigram_prob_score",
     tags=("text", "quality", "lm"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         train_toks AS (
             SELECT t.* FROM toks t
             WHERE substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 2) < 'cc'
@@ -853,7 +834,7 @@ def text_unigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc reduction folds p values in position order (sequential
     double sum — partition-layout independent)."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d)
+    toks = tokens(d)
     train_toks = toks.filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < "cc"
     )
@@ -978,7 +959,7 @@ _BM25_TERMS = ("spark", "vector", "merge")
     "text_bm25_topk",
     tags=("text", "search", "ranking"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
         stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
                          CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
@@ -1014,7 +995,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index shape as text_tfidf, upgraded to the ranking every
     retrieval / RAG pipeline actually serves."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d)
+    toks = tokens(d)
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -1052,7 +1033,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
     tags=("text", "vocab"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         freq AS (SELECT tok, COUNT(*) AS freq FROM toks GROUP BY tok),
         ranked AS (
             SELECT tok, freq,
@@ -1083,7 +1064,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((cum-freq)*10 < total*9: strictly before the prefix reaches
     coverage), so the boundary is exact in both engines."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    freq = _tokens(d).groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
+    freq = tokens(d).groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     ranked, totals = global_rank_running_sums(
         freq, [F.col("freq").desc(), F.col("tok")], ["freq"], rank_col="rank"
     )
@@ -1107,7 +1088,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH toks AS (
             SELECT d.source, t.tok
-            FROM ({_TOKENS_SQL}) t JOIN documents d USING (doc_id)
+            FROM ({TOKENS_SQL}) t JOIN documents d USING (doc_id)
         ),
         obs AS (SELECT source, tok, COUNT(*) AS obs FROM toks GROUP BY source, tok),
         corpus AS (SELECT tok, COUNT(*) AS c_tok FROM toks GROUP BY tok),
@@ -1141,7 +1122,7 @@ def text_source_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts, quantized to DECIMAL(30,10) before the per-source
     sum — order-independent, bit-identical across engines."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d).join(d.select("doc_id", "source"), "doc_id").select(
+    toks = tokens(d).join(d.select("doc_id", "source"), "doc_id").select(
         "source", "tok"
     )
     obs = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("obs"))
@@ -1170,7 +1151,7 @@ def text_source_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bpe_pair_counts",
     tags=("text", "tokenizer"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         chars AS (
             SELECT tok,
                    generate_subscripts(string_split_regex(tok, ''), 1) AS i,
@@ -1202,7 +1183,7 @@ def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence+transform over the word's character array (no self-join,
     unlike the oracle's relational formulation)."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    tok_freq = _tokens(d).groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
+    tok_freq = tokens(d).groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     chars = F.filter(F.split(F.col("tok"), ""), lambda c: c != "")
     pair_arr = F.transform(
         F.sequence(F.lit(0), F.size(chars) - 2),
@@ -1229,7 +1210,7 @@ _SPAN_N = 8
     "text_span_dedup",
     tags=("text", "dedup"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         doc_arr AS (
             SELECT doc_id, list(tok ORDER BY pos) AS t FROM toks GROUP BY doc_id
         ),
@@ -1386,7 +1367,7 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_containment_pairs",
     tags=("text", "dedup", "similarity"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         sh AS (
             SELECT DISTINCT doc_id,
                    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
@@ -1449,7 +1430,7 @@ _RAKE_STOP = (
     "text_keyword_rake",
     tags=("text", "keywords"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         flagged AS (
             SELECT doc_id, pos, tok,
                    CASE WHEN tok IN {str(tuple(_RAKE_STOP))} THEN 1 ELSE 0 END AS stop
@@ -1490,7 +1471,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     two windows sharing the per-doc partitioning + one vocab-sized
     agg."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = _tokens(d)
+    toks = tokens(d)
     stop = F.when(F.col("tok").isin(*_RAKE_STOP), 1).otherwise(0)
     w = Window.partitionBy("doc_id").orderBy("pos")
     islands = toks.select(
@@ -1816,7 +1797,7 @@ def text_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_burstiness",
     tags=("text", "stats"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         n AS (SELECT COUNT(*) AS n_docs FROM documents),
         per_doc AS (
             SELECT tok, doc_id, COUNT(*) AS c
@@ -1859,7 +1840,7 @@ def text_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab aggregate would serialize at web-scale vocabularies."""
     d = load_table_parallel(spark, sf_dir, "documents")
     n_docs = d.count()  # scalar, driver-side by design (metadata count)
-    per_doc = _tokens(d).groupBy("tok", "doc_id").agg(
+    per_doc = tokens(d).groupBy("tok", "doc_id").agg(
         F.count(F.lit(1)).alias("c")
     )
     per_tok = per_doc.groupBy("tok").agg(
@@ -1889,7 +1870,7 @@ _LM_TRAIN_HI, _LM_TEST_LO = "cc", "e6"
     "text_bigram_coverage",
     tags=("text", "lm", "dedup"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         bigrams AS (
             SELECT doc_id, tok || ' ' ||
                    lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS bg
@@ -1931,7 +1912,7 @@ def text_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table_parallel(spark, sf_dir, "documents")
     w = Window.partitionBy("doc_id").orderBy("pos")
     bg = (
-        _tokens(d)
+        tokens(d)
         .select(
             "doc_id",
             F.concat_ws(" ", "tok", F.lead("tok", 1).over(w)).alias("bg"),
@@ -1970,7 +1951,7 @@ def text_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_feature_hashing",
     tags=("text", "ml", "features"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         hashed AS (
             SELECT doc_id,
                    CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % 64
@@ -2011,7 +1992,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long") % 64
     )
     features = (
-        _tokens(d)
+        tokens(d)
         .select("doc_id", idx.alias("feature_idx"))
         .groupBy("doc_id", "feature_idx")
         .agg(F.count(F.lit(1)).alias("count"))
@@ -2573,7 +2554,7 @@ def text_rouge_l_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_readability_fk",
     tags=("text", "quality", "agg"),
-    oracle="""
+    oracle=f"""
         WITH per_doc AS (
             SELECT lang,
                    CAST(len(list_filter(string_split(text, ' '),
@@ -2597,8 +2578,7 @@ def text_rouge_l_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(w) AS BIGINT) AS total_words,
                CAST(SUM(syl) AS BIGINT) AS total_syllables,
-               CAST(CAST(SUM(CAST(FLOOR(fk * 1e6) AS DECIMAL(38,0)))
-                    AS VARCHAR) AS DOUBLE) / 1e6
+               {o_fsum('fk')}
                  / CAST(COUNT(*) AS DOUBLE) AS mean_fk_grade
         FROM scored
         GROUP BY lang
@@ -2617,7 +2597,6 @@ def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; the per-language mean rides the floor-scale fsum so the
     reduction is order-free. One scan, one small-key shuffle;
     everything per-doc is a JVM-side row projection (no Python)."""
-    from finance_etl_spark.plans.ml import _fsum
 
     d = load_table_parallel(spark, sf_dir, "documents")
     per_doc = d.select(
@@ -2652,7 +2631,7 @@ def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("w").cast("bigint").alias("total_words"),
             F.sum("syl").cast("bigint").alias("total_syllables"),
-            (_fsum(F.col("fk")) / F.count(F.lit(1)).cast("double")).alias(
+            (fsum(F.col("fk")) / F.count(F.lit(1)).cast("double")).alias(
                 "mean_fk_grade"
             ),
         )
@@ -2664,7 +2643,7 @@ def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_c4_gopher_filters",
     tags=("text", "quality", "curation"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         per_tok AS (
             SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
             FROM toks GROUP BY doc_id, tok
@@ -2717,7 +2696,7 @@ def text_c4_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragments. Joins carry doc_id + counters, never document bytes."""
     d = load_table_parallel(spark, sf_dir, "documents")
     per_tok = (
-        _tokens(d)
+        tokens(d)
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -2769,7 +2748,7 @@ def text_c4_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_kneser_ney_bigram",
     tags=("text", "lm", "agg"),
     oracle=f"""
-        WITH toks AS ({_TOKENS_SQL}),
+        WITH toks AS ({TOKENS_SQL}),
         bg AS MATERIALIZED (
             SELECT a.tok AS w1, b.tok AS w2
             FROM toks a JOIN toks b
@@ -2818,7 +2797,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c12 DESC, w1, w2). c12 >= 1 > d, so max(c12-d, 0) simplifies
     away exactly."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    t = _tokens(d)
+    t = tokens(d)
     a = t.select("doc_id", "pos", F.col("tok").alias("w1"))
     b = t.select(
         F.col("doc_id").alias("doc_id_b"),

@@ -11,11 +11,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import DEC, dsum
+from finance_etl_spark.functions.money import (
+    DEC,
+    as_d,
+    dsum,
+    lsum,
+    o_dsum,
+    o_lsum,
+    o_ordered_fold_sum,
+)
 from finance_etl_spark.io.readers import load_table
 from finance_etl_spark.operators.joins import asof_join, range_join
 from finance_etl_spark.operators.sessionize import sessionize
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.recipes import (
+    DAILY_SCALED_SQL,
+    EVENT_DAILY_RN_SQL,
+    EVENT_DAILY_SQL,
+    EVENT_DAILY_XQ_SQL,
+    daily_scaled,
+    event_daily,
+    event_daily_rn,
+    event_daily_xq,
+)
+from finance_etl_spark.plans.registry import register
 
 
 def _events(spark, sf_dir, etype: str) -> DataFrame:
@@ -319,10 +337,10 @@ def ts_rolling_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_ewma_smooth",
     tags=("timeseries", "window", "finance"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
             SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+                   {o_dsum('value')}
                      AS daily_value
             FROM events GROUP BY event_type, day
         )
@@ -368,7 +386,6 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rollup_oracle() -> str:
-    from finance_etl_spark.plans.registry import o_dsum
 
     def level(grain: str) -> str:
         return f"""
@@ -446,10 +463,10 @@ def ts_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_max_drawdown",
     tags=("timeseries", "window", "finance"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
             SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+                   {o_dsum('value')}
                      AS daily_value
             FROM events GROUP BY event_type, day
         ), equity AS (
@@ -621,11 +638,10 @@ def ts_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_gap_fill_locf",
     tags=("timeseries", "gap-fill", "window"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
             SELECT user_id, CAST(ts AS DATE) AS d,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR)
-                        AS DOUBLE) AS v
+                   {o_dsum('value')} AS v
             FROM events GROUP BY user_id, CAST(ts AS DATE)
         ),
         bounds AS (
@@ -1380,11 +1396,10 @@ def ts_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_interpolate_linear",
     tags=("timeseries", "gap-fill", "window"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
             SELECT user_id, CAST(ts AS DATE) AS d,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR)
-                        AS DOUBLE) AS v
+                   {o_dsum('value')} AS v
             FROM events GROUP BY user_id, CAST(ts AS DATE)
         ),
         bounds AS (
@@ -1633,12 +1648,8 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_autocorr_lags",
     tags=("timeseries", "window", "stats"),
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   SUM(CAST(value AS DECIMAL(18,6))) AS x
-            FROM events GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({EVENT_DAILY_SQL}),
         lagged AS (
             SELECT a.event_type, ks.k, a.x, b.x AS xl
             FROM daily a
@@ -1674,10 +1685,7 @@ def ts_autocorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     so all lags compute in one shuffle; windows are per (type, lag)
     over O(days) rows. Corpus-scale work is only the daily
     aggregation — map-side partials."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("x"))
+    daily = event_daily(spark, sf_dir)
     ks = spark.range(1, 4).select(F.col("id").cast("int").alias("k"))
     # lag-by-DATE (not by row position): a self-join on the shifted
     # date spine, so gaps in the series pair correctly — and the lag
@@ -2239,7 +2247,7 @@ def ts_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_pattern_reversal",
     tags=("timeseries", "window", "pattern"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
             SELECT event_type, CAST(ts AS DATE) AS d,
                    SUM(CAST(value AS DECIMAL(30,10))) AS y
@@ -2262,8 +2270,7 @@ def ts_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n_reversals,
                MIN(d) AS first_reversal,
                MAX(d) AS last_reversal,
-               CAST(CAST(SUM(CAST(rebound AS DECIMAL(30,10))) AS VARCHAR)
-                    AS DOUBLE) AS total_rebound
+               {o_dsum('rebound')} AS total_rebound
         FROM hits
         GROUP BY event_type
     """,
@@ -2321,11 +2328,7 @@ def ts_pattern_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_yule_walker_ar2",
     tags=("timeseries", "ml", "window", "agg"),
     oracle=f"""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   SUM(CAST(value AS DECIMAL(18,6))) AS x
-            FROM events GROUP BY 1, 2
-        ),
+        WITH daily AS ({EVENT_DAILY_SQL}),
         lagged AS (
             SELECT event_type, d, x,
                    LAG(x, 1) OVER w AS x1,
@@ -2390,10 +2393,7 @@ def ts_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over O(days) rows and the driver sees O(series) rows.
     The decimal lag products are exact up to DECIMAL(38,12) — at
     larger daily magnitudes widen the base cast, not the algorithm."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("x"))
+    daily = event_daily(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("d")
     lagged = daily.select(
         "event_type",
@@ -2477,11 +2477,7 @@ _DTW_SENT = 100_000_000_000_000_000  # unreachable-cell sentinel
     "ts_dtw_band",
     tags=("timeseries", "udf", "agg"),
     oracle=f"""
-        WITH RECURSIVE daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   SUM(CAST(value AS DECIMAL(18,6))) AS x
-            FROM events GROUP BY 1, 2
-        ),
+        WITH RECURSIVE daily AS ({EVENT_DAILY_SQL}),
         ser AS (
             SELECT event_type,
                    list(CAST(x * 1000000 AS BIGINT) ORDER BY d) AS xs
@@ -2548,10 +2544,7 @@ def ts_dtw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     feasible path at unequal lengths."""
     import pandas as pd
 
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("x"))
+    daily = event_daily(spark, sf_dir)
     ser = daily.groupBy("event_type").agg(
         F.transform(
             F.sort_array(
@@ -2659,11 +2652,7 @@ _HAAR_LEVELS = 5  # 30-day series padded to 32 = 2^5
     "ts_haar_energy",
     tags=("timeseries", "agg"),
     oracle=f"""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   SUM(CAST(value AS DECIMAL(18,6))) AS x
-            FROM events GROUP BY 1, 2
-        ),
+        WITH daily AS ({EVENT_DAILY_SQL}),
         leaves AS (
             SELECT event_type,
                    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d)
@@ -2708,10 +2697,8 @@ def ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation; the pyramid runs on O(types x 32) rows. The per-level
     energies read as a scale spectrum: where the series' variance
     lives (daily noise vs weekly cycle vs month trend)."""
-    e = load_table(spark, sf_dir, "events")
     daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("x"))
+        event_daily(spark, sf_dir)
         .persist()  # O(types x days); feeds leaves AND the pad rows
     )
     w = Window.partitionBy("event_type").orderBy("d")
@@ -2774,11 +2761,7 @@ def ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_pacf",
     tags=("timeseries", "stats", "window", "agg"),
     oracle=f"""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   SUM(CAST(value AS DECIMAL(18,6))) AS x
-            FROM events GROUP BY 1, 2
-        ),
+        WITH daily AS ({EVENT_DAILY_SQL}),
         lagged AS (
             SELECT event_type, x,
                    LAG(x, 1) OVER w AS x1,
@@ -2838,10 +2821,7 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical-order IEEE edges. PACF cutting off after lag p is the
     textbook AR(p) identification signal; pacf2 here equals the AR(2)
     fit's phi2 exactly (shared estimator, pinned in tests)."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("x"))
+    daily = event_daily(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("d")
     lagged = daily.select(
         "event_type",
@@ -2894,14 +2874,8 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_gapfill_interpolate",
     tags=("ts", "window", "gapfill"),
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(FLOOR(value * 1e6) AS DECIMAL(38,0)))
-                        AS BIGINT) AS v
-            FROM events
-            GROUP BY 1, 2
-        ),
+    oracle=f"""
+        WITH daily AS ({DAILY_SCALED_SQL}),
         sparse AS (
             SELECT * FROM daily WHERE dayofmonth(day) % 3 <> 0
         ),
@@ -2962,14 +2936,7 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     OBSERVED days per series, so every gap is interior (no
     extrapolation nulls to diverge on). Scale: windows partition by
     series; the spine explode is O(days), never corpus-sized."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("value") * F.lit(1e6)).cast("decimal(38,0)"))
-        .cast("bigint")
-        .alias("v")
-    )
+    daily = daily_scaled(spark, sf_dir)
     sparse = daily.filter(F.dayofmonth("day") % 3 != 0)
     spine = (
         sparse.groupBy("event_type")
@@ -3024,33 +2991,11 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "day")
 
 
-_DAILY_SCALED_SQL = """
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               CAST(SUM(CAST(FLOOR(value * 1e6) AS DECIMAL(38,0)))
-                    AS BIGINT) AS v
-        FROM events GROUP BY 1, 2
-"""
-
-
-def _daily_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_type, day, v): daily totals as exact floor-scaled
-    BIGINTs — the order-free integer base both robust-trend ops
-    share."""
-    e = load_table(spark, sf_dir, "events")
-    return e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("value") * F.lit(1e6)).cast("decimal(38,0)"))
-        .cast("bigint")
-        .alias("v")
-    )
-
-
 @register(
     "ts_theil_sen",
     tags=("ts", "stats", "robust"),
     oracle=f"""
-        WITH daily AS ({_DAILY_SCALED_SQL}),
+        WITH daily AS ({DAILY_SCALED_SQL}),
         pairs AS (
             SELECT a.event_type,
                    CAST(b.v - a.v AS DOUBLE)
@@ -3085,7 +3030,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented cost bound — days-per-series, not the corpus,
     squares; the corpus itself collapses to daily rows in one
     map-side scan. DuckDB's // and Spark's DIV pin the rank floor."""
-    daily = _daily_scaled(spark, sf_dir)
+    daily = daily_scaled(spark, sf_dir)
     a = daily.select(
         "event_type", F.col("day").alias("d1"), F.col("v").alias("v1")
     )
@@ -3134,7 +3079,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_mann_kendall",
     tags=("ts", "stats", "robust", "hypothesis"),
     oracle=f"""
-        WITH daily AS ({_DAILY_SCALED_SQL}),
+        WITH daily AS ({DAILY_SCALED_SQL}),
         n AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
             FROM daily GROUP BY event_type
@@ -3189,7 +3134,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-tied Var=0 degenerate (Spark NULL vs DuckDB IEEE divergence
     class). Same O(days²)-per-series pair join and one-scan daily
     collapse as ts_theil_sen."""
-    daily = _daily_scaled(spark, sf_dir).persist()
+    daily = daily_scaled(spark, sf_dir).persist()
     n = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
@@ -3265,7 +3210,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_granger_causality_1lag",
     tags=("ts", "stats", "hypothesis"),
     oracle=f"""
-        WITH daily AS ({_DAILY_SCALED_SQL}),
+        WITH daily AS ({DAILY_SCALED_SQL}),
         lagged AS (
             SELECT event_type, day, v,
                    lag(v) OVER (PARTITION BY event_type ORDER BY day)
@@ -3354,7 +3299,7 @@ def ts_granger_causality_1lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-guard identically on both engines. Scale: O(types²) pairs of
     O(days) rows after the collapse; nothing corpus-sized crosses the
     pair join."""
-    daily = _daily_scaled(spark, sf_dir)
+    daily = daily_scaled(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
         "event_type", "day", "v", F.lag("v").over(w).alias("v1")
@@ -3451,14 +3396,9 @@ def ts_granger_causality_1lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_ljung_box",
     tags=("timeseries", "stats", "window"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) AS x,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_RN_SQL}
         ),
         full_s AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -3519,19 +3459,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out is a 3-row broadcast; corpus-scale work is one map-side-
     combining daily agg. The three r_k^2/(n-k) terms fold in the fixed
     k order, so the Q sum is order-free by construction."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("x"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("event_type").orderBy("d")
-            ),
-        )
-        .drop("d")
-    )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = event_daily_rn(spark, sf_dir).drop("d")
     full_s = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(F.sum("x")).alias("sx"),
@@ -3615,14 +3543,9 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_bollinger_bands",
     tags=("timeseries", "window"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) AS x,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_RN_SQL}
         ),
         roll AS (
             SELECT event_type, rn,
@@ -3647,8 +3570,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_upper,
                CAST(SUM(CASE WHEN xd < mid - 2 * sigma
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_lower,
-               CAST(SUM(CAST(FLOOR(4 * sigma * 1e6) AS BIGINT))
-                    AS BIGINT) AS bandwidth_q6_sum
+               {o_lsum('4 * sigma')} AS bandwidth_q6_sum
         FROM bands GROUP BY event_type
         ORDER BY event_type
     """,
@@ -3663,21 +3585,12 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series SUM is exact integer arithmetic — no double folds
     anywhere. Windows partition by series over the 30-row daily
     aggregate; corpus-scale work is one map-side-combining agg."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("x"))
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
+    daily = event_daily_rn(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
         .orderBy("rn")
         .rowsBetween(-6, Window.currentRow)
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     roll = daily.select(
         "event_type",
         "rn",
@@ -3713,11 +3626,7 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_lower"),
-            F.sum(
-                F.floor(F.lit(4.0) * F.col("sigma") * F.lit(1e6)).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("bandwidth_q6_sum"),
+            lsum(F.lit(4.0) * F.col("sigma")).alias("bandwidth_q6_sum"),
         )
         .orderBy("event_type")
     )
@@ -3736,14 +3645,9 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_sax_symbols",
     tags=("timeseries", "window", "text"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) AS x,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_RN_SQL}
         ),
         stats AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -3800,16 +3704,7 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     string_agg / sorted collect_list recipe (agg_string_concat_
     ordered). All window/group work is over the model-sized daily
     relation; the corpus collapses in the first agg."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("x"))
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = event_daily_rn(spark, sf_dir)
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(F.sum("x")).alias("sx"),
@@ -4048,7 +3943,6 @@ def ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").over(w).cast("decimal(38,6)").alias("ws"),
     )
     trend = tr.filter(F.col("wn") == 7)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     seas = trend.groupBy("event_type", "dow").agg(
         F.count(F.lit(1)).cast("bigint").alias("c"),
         as_d(F.sum("x")).alias("sx"),
@@ -4084,14 +3978,9 @@ def ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_viterbi_2state",
     tags=("timeseries", "dp", "hmm"),
-    oracle="""
+    oracle=f"""
         WITH RECURSIVE daily AS (
-            SELECT event_type,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) AS x,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_RN_SQL}
         ),
         st AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -4152,20 +4041,7 @@ def ts_viterbi_2state(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE. Ties prefer the incumbent state on both engines (>=). At
     100 TB the corpus collapses to per-series daily sums first; the
     DP state is 2 integers + 2 path strings per series."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(18,6)")
-            .alias("x")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = event_daily_rn(spark, sf_dir)
     st = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(F.sum("x")).alias("sx"),
@@ -4247,14 +4123,9 @@ def ts_viterbi_2state(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_cusum_changepoint",
     tags=("timeseries", "window", "stats"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS d,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xq,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_XQ_SQL}
         ),
         pre AS (
             SELECT event_type, d, rn, xq,
@@ -4299,22 +4170,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition per series over calendar-bounded rows; corpus work is
     one map-side-combining daily agg. This is the screening pass a
     monitoring pipeline runs before fitting anything heavier."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)")
-                * 1000000
-            )
-            .cast("bigint")
-            .alias("xq")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
+    daily = event_daily_xq(spark, sf_dir)
     wcum = (
         Window.partitionBy("event_type")
         .orderBy("rn")
@@ -4407,7 +4263,6 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy("event_type", F.col("ts").cast("date").alias("d")).agg(
         F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("x")
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     st = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         as_d(F.sum("x")).alias("sx"),
@@ -4447,14 +4302,9 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_hurst_rs",
     tags=("timeseries", "window", "stats"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xq,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_XQ_SQL}
         ),
         ms AS (SELECT unnest([5, 10, 15, 30]) AS m),
         blk AS (
@@ -4541,22 +4391,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums. Window sizes
     {5,10,15,30} divide the 30-day calendar exactly. Corpus work is
     the daily agg; every window partitions by (series, m, block)."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)")
-                * 1000000
-            )
-            .cast("bigint")
-            .alias("xq")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
+    daily = event_daily_xq(spark, sf_dir)
     ms = spark.createDataFrame([(5,), (10,), (15,), (30,)], "m int")
     blk = (
         daily.crossJoin(F.broadcast(ms))
@@ -4587,7 +4422,6 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m").cast("decimal(38,0)") * F.col("prefix")
         - F.col("t").cast("decimal(38,0)") * F.col("sb")
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     per_blk = (
         pre.withColumn("dv", dv)
         .groupBy("event_type", "m", "b")
@@ -4638,15 +4472,14 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("m") == 30, F.col("mean_rs"))).alias("rs_30"),
     )
     kd = F.col("k").cast("double")
-    as_d2 = lambda c: c.cast("string").cast("double")  # noqa: E731
     return fold.select(
         "event_type",
         "k",
         "rs_5",
         "rs_30",
         (
-            (kd * as_d2(F.col("sxy")) - F.col("sx").cast("double") * F.col("sy").cast("double"))
-            / (kd * as_d2(F.col("sxx")) - F.col("sx").cast("double") * F.col("sx").cast("double"))
+            (kd * as_d(F.col("sxy")) - F.col("sx").cast("double") * F.col("sy").cast("double"))
+            / (kd * as_d(F.col("sxx")) - F.col("sx").cast("double") * F.col("sx").cast("double"))
         ).alias("hurst"),
     ).orderBy("event_type")
 
@@ -4654,14 +4487,9 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_forecast_backtest_mase",
     tags=("timeseries", "window", "eval"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xq,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_XQ_SQL}
         ),
         lagged AS (
             SELECT event_type, rn, xq,
@@ -4709,22 +4537,7 @@ def ts_forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition per series; the corpus collapses in the first agg. This
     is the eval harness any forecasting pipeline runs before shipping
     a model fancier than the naive baseline."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)")
-                * 1000000
-            )
-            .cast("bigint")
-            .alias("xq")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
+    daily = event_daily_xq(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("rn")
     lagged = daily.select(
         "event_type",
@@ -5049,14 +4862,9 @@ def ts_lttb_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_kpss_level",
     tags=("timeseries", "stats", "window"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xq,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_XQ_SQL}
         ),
         st AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -5108,10 +4916,10 @@ def ts_lttb_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
         lrv AS (
             SELECT s.event_type, s.n,
                    (s.sxx - CAST(s.sx AS DOUBLE) * s.sx / s.n) / s.n
-                     + 2 * list_reduce(
-                           list((1 - CAST(g2.l AS DOUBLE) / 4) * g2.g
-                                ORDER BY g2.l),
-                           (a, x) -> a + x) AS s2_lr
+                     + 2 * {o_ordered_fold_sum(
+                         'g2.l',
+                         '(1 - CAST(g2.l AS DOUBLE) / 4) * g2.g',
+                     )} AS s2_lr
             FROM st s JOIN gam g2 ON g2.event_type = s.event_type
             GROUP BY s.event_type, s.n, s.sxx, s.sx
         )
@@ -5137,23 +4945,7 @@ def ts_kpss_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     The complement of the Mann-Kendall/runs tests: KPSS's null is
     stationarity, so it catches drifting pipelines those tests
     miss."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)")
-                * 1000000
-            )
-            .cast("bigint")
-            .alias("xq")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = event_daily_xq(spark, sf_dir)
     st = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("xq").cast("bigint").alias("sx"),
@@ -5271,15 +5063,9 @@ def ts_kpss_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_cusum_tabular",
     tags=("timeseries", "window", "dq"),
-    oracle="""
+    oracle=f"""
         WITH daily AS (
-            SELECT event_type,
-                   CAST(ts AS DATE) AS d,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                        AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS xq,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY CAST(ts AS DATE)) AS rn
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
+            {EVENT_DAILY_XQ_SQL}
         ),
         st AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -5329,22 +5115,7 @@ def ts_cusum_tabular(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison at h = 8 units. The recursion-to-prefix-identity is the
     same trick as ts_cusum_changepoint's scaling — no fold, no UDF, no
     state."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)")
-                * 1000000
-            )
-            .cast("bigint")
-            .alias("xq")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
-        )
-    )
+    daily = event_daily_xq(spark, sf_dir)
     st = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("xq").cast("bigint").alias("sx"),
@@ -5388,7 +5159,7 @@ def ts_cusum_tabular(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_rolling_slope",
     tags=("ts", "window", "stats"),
     oracle=f"""
-        WITH daily AS ({_DAILY_SCALED_SQL}),
+        WITH daily AS ({DAILY_SCALED_SQL}),
         base AS (
             SELECT event_type, day,
                    CAST(date_diff('day', DATE '2024-01-01', day) AS BIGINT)
@@ -5436,8 +5207,7 @@ def ts_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the zero-day-variance degenerate NULLs via the same CASE on both
     engines. Windows partition per series over calendar-bounded daily
     rows; the corpus reduces map-side first."""
-    daily = _daily_scaled(spark, sf_dir)
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    daily = daily_scaled(spark, sf_dir)
     base = daily.select(
         "event_type",
         "day",
@@ -5486,7 +5256,7 @@ def ts_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_turning_points",
     tags=("ts", "stats", "window"),
     oracle=f"""
-        WITH daily AS ({_DAILY_SCALED_SQL}),
+        WITH daily AS ({DAILY_SCALED_SQL}),
         lagged AS (
             SELECT event_type, v,
                    LAG(v) OVER w AS vp, LEAD(v) OVER w AS vn
@@ -5522,7 +5292,7 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation; z is one guarded sqrt edge (n<3 NULLs — no interior
     points). Lag/lead windows partition per series over
     calendar-bounded rows; corpus work is the one daily agg."""
-    daily = _daily_scaled(spark, sf_dir)
+    daily = daily_scaled(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
         "event_type",

@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import dsum
+from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.registry import register
 
 
 def _eur_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,7 +346,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join", "agg"),
     oracle=f"""
         SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-               {o_dsum('l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity')}
+               {o_dsum(
+                   'l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity',
+               )}
                    AS sum_profit
         FROM lineitem
         JOIN part ON p_partkey = l_partkey

@@ -21,9 +21,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from finance_etl_spark.functions.money import (
+    fsum,
+    o_dsum,
+    o_fsum,
+    o_ordered_fold_sum,
+    o_qsum,
+    qsum,
+)
 from finance_etl_spark.functions.vectors import cosine, dot, l2_norm
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import o_dsum, register
+from finance_etl_spark.plans.registry import register
 
 # DuckDB equivalents of functions.vectors (sequential fold).
 _DOT = (
@@ -1191,7 +1199,7 @@ def _pq_sql() -> str:
         ),
         adc AS (
             SELECT query_id, cand_id,
-                   list_reduce(list(t ORDER BY j), (a, x) -> a + x) AS adc_d2
+                   {o_ordered_fold_sum('j', 't')} AS adc_d2
             FROM terms GROUP BY query_id, cand_id
         ),
         short AS (
@@ -2680,7 +2688,7 @@ def vec_farthest_point_init(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vec_silhouette_simplified",
     tags=("vector", "eval", "agg"),
-    oracle="""
+    oracle=f"""
         WITH elems AS (
             SELECT label, vec_id,
                    generate_subscripts(embedding, 1) AS dim,
@@ -2695,8 +2703,7 @@ def vec_farthest_point_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         d2 AS (
             SELECT e.vec_id, e.label, c.clabel,
-                   CAST(SUM(CAST(FLOOR((e.val - c.c) * (e.val - c.c) * 1e12)
-                        AS DECIMAL(38,0))) AS BIGINT) AS dq
+                   {o_qsum('(e.val - c.c) * (e.val - c.c)', 12)} AS dq
             FROM elems e JOIN cents c ON c.dim = e.dim
             GROUP BY e.vec_id, e.label, c.clabel
         ),
@@ -2715,8 +2722,7 @@ def vec_farthest_point_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM ab
         )
         SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-               CAST(CAST(SUM(CAST(FLOOR(sil * 1e6) AS DECIMAL(38,0)))
-                    AS VARCHAR) AS DOUBLE) / 1e6
+               {o_fsum('sil')}
                  / CAST(COUNT(*) AS DOUBLE) AS mean_silhouette
         FROM s GROUP BY label
         ORDER BY label
@@ -2761,15 +2767,9 @@ def vec_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         elems.join(F.broadcast(cents), "dim")
         .groupBy("vec_id", "label", "clabel")
         .agg(
-            F.sum(
-                F.floor(
-                    (F.col("val") - F.col("c"))
-                    * (F.col("val") - F.col("c"))
-                    * F.lit(1e12)
-                ).cast("decimal(38,0)")
-            )
-            .cast("bigint")
-            .alias("dq")
+            qsum(
+                (F.col("val") - F.col("c")) * (F.col("val") - F.col("c")), 12
+            ).alias("dq")
         )
     )
     ab = d2.groupBy("vec_id", "label").agg(
@@ -2783,14 +2783,13 @@ def vec_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     sil = (F.col("b") - F.col("a")).cast("double") / F.greatest(
         F.col("a"), F.col("b")
     ).cast("double")
-    from finance_etl_spark.plans.ml import _fsum
 
     return (
         ab.select("label", sil.alias("sil"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-            (_fsum(F.col("sil")) / F.count(F.lit(1)).cast("double")).alias(
+            (fsum(F.col("sil")) / F.count(F.lit(1)).cast("double")).alias(
                 "mean_silhouette"
             ),
         )
@@ -2801,7 +2800,7 @@ def vec_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vec_kmeans_unrolled2",
     tags=("vector", "cluster", "agg"),
-    oracle="""
+    oracle=f"""
         WITH elems AS (
             SELECT vec_id,
                    generate_subscripts(embedding, 1) AS dim,
@@ -2821,8 +2820,7 @@ def vec_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         d1 AS (
             SELECT e.vec_id, c.cluster_id,
-                   CAST(SUM(CAST(FLOOR((e.val - c.c) * (e.val - c.c) * 1e12)
-                        AS DECIMAL(38,0))) AS BIGINT) AS dq
+                   {o_qsum('(e.val - c.c) * (e.val - c.c)', 12)} AS dq
             FROM elems e JOIN c0 c ON c.dim = e.dim
             GROUP BY e.vec_id, c.cluster_id
         ),
@@ -2844,8 +2842,7 @@ def vec_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         d2 AS (
             SELECT e.vec_id, c.cluster_id,
-                   CAST(SUM(CAST(FLOOR((e.val - c.c) * (e.val - c.c) * 1e12)
-                        AS DECIMAL(38,0))) AS BIGINT) AS dq
+                   {o_qsum('(e.val - c.c) * (e.val - c.c)', 12)} AS dq
             FROM elems e JOIN c1 c ON c.dim = e.dim
             GROUP BY e.vec_id, c.cluster_id
         ),
@@ -2912,15 +2909,9 @@ def vec_kmeans_unrolled2(spark: SparkSession, sf_dir: str) -> DataFrame:
             elems.join(F.broadcast(cents), "dim")
             .groupBy("vec_id", "cluster_id")
             .agg(
-                F.sum(
-                    F.floor(
-                        (F.col("val") - F.col("c"))
-                        * (F.col("val") - F.col("c"))
-                        * F.lit(1e12)
-                    ).cast("decimal(38,0)")
-                )
-                .cast("bigint")
-                .alias("dq")
+                qsum(
+                    (F.col("val") - F.col("c")) * (F.col("val") - F.col("c")), 12
+                ).alias("dq")
             )
         )
 
@@ -2968,7 +2959,7 @@ def vec_kmeans_unrolled2(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vec_mmr_unrolled",
     tags=("vector", "rerank", "agg"),
-    oracle="""
+    oracle=f"""
         WITH el AS MATERIALIZED (
             SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
                    CAST(unnest(embedding) AS DOUBLE) AS val
@@ -2980,8 +2971,7 @@ def vec_kmeans_unrolled2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         rel AS MATERIALIZED (
             SELECT p.query_id, e.vec_id,
-                   CAST(SUM(CAST(FLOOR(e.val * p.qval * 1e12)
-                        AS DECIMAL(38,0))) AS BIGINT) AS relq
+                   {o_qsum('e.val * p.qval', 12)} AS relq
             FROM el e JOIN probes p ON p.dim = e.dim
             WHERE e.vec_id <> p.query_id
             GROUP BY p.query_id, e.vec_id
@@ -2996,8 +2986,7 @@ def vec_kmeans_unrolled2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         sim AS MATERIALIZED (
             SELECT a.query_id, a.vec_id AS va, b.vec_id AS vb,
-                   CAST(SUM(CAST(FLOOR(ea.val * eb.val * 1e12)
-                        AS DECIMAL(38,0))) AS BIGINT) AS simq
+                   {o_qsum('ea.val * eb.val', 12)} AS simq
             FROM pool a
             JOIN pool b ON b.query_id = a.query_id AND b.vec_id <> a.vec_id
             JOIN el ea ON ea.vec_id = a.vec_id
@@ -3111,13 +3100,7 @@ def vec_mmr_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(
-            F.sum(
-                F.floor(F.col("val") * F.col("qval") * F.lit(1e12)).cast(
-                    "decimal(38,0)"
-                )
-            )
-            .cast("bigint")
-            .alias("relq")
+            qsum(F.col("val") * F.col("qval"), 12).alias("relq")
         )
     )
     wpool = Window.partitionBy("query_id").orderBy(F.col("relq").desc(), "vec_id")
@@ -3141,13 +3124,7 @@ def vec_mmr_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(eb, (F.col("vb") == F.col("vbx")) & (F.col("dim") == F.col("dim_b")))
         .groupBy("query_id", "va", "vb")
         .agg(
-            F.sum(
-                F.floor(F.col("va_val") * F.col("vb_val") * F.lit(1e12)).cast(
-                    "decimal(38,0)"
-                )
-            )
-            .cast("bigint")
-            .alias("simq")
+            qsum(F.col("va_val") * F.col("vb_val"), 12).alias("simq")
         )
         .persist()
     )

@@ -27,14 +27,32 @@ RUNTIME_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+# Confs that only change speed: a deployment that refuses them still
+# returns the same answers, so a failed set is tolerated. Every other
+# RUNTIME_CONFS entry changes results and must apply.
+PERF_CONFS = frozenset(
+    {
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+        "spark.sql.execution.arrow.pyspark.enabled",
+    }
+)
+
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Pin runtime confs this engine's semantics rely on. Idempotent."""
+    """Pin runtime confs this engine's semantics rely on. Idempotent.
+
+    Raises if a semantic conf (UTC session time zone, nanos-as-long
+    parquet timestamps) cannot be set: queries would otherwise return
+    shifted or unreadable timestamps instead of failing.
+    """
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # read-only in some deployments; queries are written to survive
+        except Exception as e:
+            if k not in PERF_CONFS:
+                raise RuntimeError(f"cannot set semantic conf {k}={v}") from e
     _quiet_bounded_window_warning(spark)
     return spark
 
@@ -82,14 +100,11 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    for k, v in RUNTIME_CONFS.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return configure(spark)

@@ -31,9 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from finance_etl_spark.plans.curation import (  # noqa: E402
-    _trade_edges_undirected,
-)
+from finance_etl_spark.plans.recipes import trade_edges_undirected  # noqa: E402
 from finance_etl_spark.session import get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -103,7 +101,7 @@ def main() -> int:
     # the real sf0.1 trade graph, collected once (<=300 bounded edges)
     base_rows = [
         (int(r["a"]), int(r["b"]))
-        for r in _trade_edges_undirected(spark, SRC).collect()
+        for r in trade_edges_undirected(spark, SRC).collect()
     ]
     # warm-up (JIT) on a throwaway single copy
     _peel(_copies(spark, base_rows, 1)).count()
