@@ -8,11 +8,13 @@ one parquet file per table under ``{sf_dir}/{name}.parquet``.
 
 from __future__ import annotations
 
+import json
 import os
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampType
 
 TABLES = (
     "region",
@@ -30,23 +32,92 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            # TIMESTAMP(NANOS) surfaced as epoch-nanos LONG (see
-            # session.RUNTIME_CONFS). Integer-divide to micros before the
-            # cast — a double division would lose precision above 2^53 ns.
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif not isinstance(ts_type, TimestampType):
-            # Parquet TIMESTAMP with isAdjustedToUTC=false surfaces as
-            # TIMESTAMP_NTZ. The engine stores instants; with the session
-            # pinned to UTC the NTZ→TZ cast is value-preserving, and every
-            # downstream epoch computation (unix_micros, cast-to-double)
-            # requires the instant type.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, without the
+    Spark job inference launches: one footer is read through py4j and
+    converted by Spark's own footer converter under the session's conf
+    (nanos-as-long, NTZ inference, binary-as-string), so the two agree
+    field for field. Partition columns are not included;
+    ``spark.read.schema(...)`` still discovers and appends them.
+
+    For a directory the first visible data file in name order is used,
+    descending into ``k=v`` partition directories, like inference
+    without ``mergeSchema``. Raises FileNotFoundError when ``path`` does
+    not exist or holds no data file."""
+    client = spark.sparkContext._gateway._gateway_client
+    # Named in full: jvm.a.b.C would make one py4j call per name segment.
+    Path, Reader, Metadata, Footer, Converter, FileFormat = (
+        JavaClass(name, client) for name in _FOOTER_CLASSES
+    )
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    footer_path = _first_data_file(hconf, Path(path))
+    if footer_path is None:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    footer = Reader.readFooter(hconf, footer_path, Metadata.SKIP_ROW_GROUPS)
+    jschema = FileFormat.readSchemaFromFooter(
+        Footer(footer_path, footer), Converter(state.conf())
+    )
+    return StructType.fromJson(json.loads(jschema.json()))
+
+
+_FOOTER_CLASSES = (
+    "org.apache.hadoop.fs.Path",
+    "org.apache.parquet.hadoop.ParquetFileReader",
+    "org.apache.parquet.format.converter.ParquetMetadataConverter",
+    "org.apache.parquet.hadoop.Footer",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat",
+)
+
+
+def _first_data_file(hconf, path):
+    """``path`` itself if it is a file, else the first visible file under
+    it in name order, searched depth-first through ``k=v`` directories;
+    None if there is none (or ``path`` does not exist). Hidden names
+    (``_SUCCESS``, ``_metadata``, ``.crc`` files) are skipped."""
+    fs = path.getFileSystem(hconf)
+    if not fs.exists(path):
+        return None
+    if not fs.getFileStatus(path).isDirectory():
+        return path
+    for st in sorted(fs.listStatus(path), key=lambda s: s.getPath().getName()):
+        name = st.getPath().getName()
+        if st.isDirectory():
+            if "=" in name and not name.startswith("."):
+                found = _first_data_file(hconf, st.getPath())
+                if found is not None:
+                    return found
+        elif not name.startswith(("_", ".")):
+            return st.getPath()
+    return None
+
+
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Bring ``events.ts`` to the session-TZ instant type, whichever
+    footer encoding surfaced. Shared by the batch and stream readers."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        # TIMESTAMP(NANOS) surfaced as epoch-nanos LONG (see
+        # session.RUNTIME_CONFS). Integer-divide to micros before the
+        # cast — a double division would lose precision above 2^53 ns.
+        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    if not isinstance(ts_type, TimestampType):
+        # Parquet TIMESTAMP with isAdjustedToUTC=false surfaces as
+        # TIMESTAMP_NTZ. The engine stores instants; with the session
+        # pinned to UTC the NTZ→TZ cast is value-preserving, and every
+        # downstream epoch computation (unix_micros, cast-to-double)
+        # requires the instant type.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One table, its schema taken from the footer (``parquet_schema``)
+    so that loading launches no Spark job."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def load_tables(

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from finance_etl_spark.io.readers import parquet_schema
 from finance_etl_spark.operators.incremental import incremental_new_records
 
 
@@ -24,11 +25,17 @@ def read_existing_keys(
 ) -> DataFrame | None:
     """D1: key scan with projection pushdown — only the key column is
     read from the sink (column pruning reaches the parquet reader).
-    Returns None when the sink does not exist yet."""
+    The schema comes from one footer, so the scan launches no job.
+
+    Returns None only when the sink does not exist yet or holds no data
+    file. Any other failure (an unreadable or corrupt part file) raises:
+    treating it as an empty sink would append every row again and
+    duplicate surrogate keys."""
     try:
-        return spark.read.parquet(path).select(key_col)
-    except Exception:
+        schema = parquet_schema(spark, path)
+    except FileNotFoundError:
         return None
+    return spark.read.schema(schema).parquet(path).select(key_col)
 
 
 def append_new_records(

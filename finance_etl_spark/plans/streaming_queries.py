@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import dsum, o_dsum
-from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.io.readers import load_table, parquet_schema
 from finance_etl_spark.plans.recipes import EVENT_DAILY_XQ_SQL
 from finance_etl_spark.plans.registry import register
 
@@ -1139,9 +1139,9 @@ def stream_live_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = _tf.mkdtemp(prefix="admit_sink_")
 
     # ---- streaming side: batch docs arrive as a file stream ----
-    batch_schema = spark.read.parquet(
-        _os.path.join(sf_dir, "documents.parquet")
-    ).schema
+    batch_schema = parquet_schema(
+        spark, _os.path.join(sf_dir, "documents.parquet")
+    )
     stream = (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1229,12 +1229,10 @@ def stream_live_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = _tf.mkdtemp(prefix="bft_src_")
     ckpt = _tf.mkdtemp(prefix="bft_ckpt_")
     sink = _tf.mkdtemp(prefix="bft_sink_")
-    _sh.copyfile(
-        _os.path.join(sf_dir, "events.parquet"),
-        _os.path.join(src_dir, "part-000.parquet"),
-    )
-    batch = spark.read.parquet(_os.path.join(sf_dir, "events.parquet"))
-    schema = batch.schema
+    events_path = _os.path.join(sf_dir, "events.parquet")
+    _sh.copyfile(events_path, _os.path.join(src_dir, "part-000.parquet"))
+    schema = parquet_schema(spark, events_path)
+    batch = spark.read.schema(schema).parquet(events_path)
 
     def run_once() -> None:
         s = (
@@ -1393,9 +1391,9 @@ def stream_live_perplexity_admission(
     c12.count(), c1.count(), vocab.count()
     sink = _tf.mkdtemp(prefix="ppl_admit_sink_")
 
-    batch_schema = spark.read.parquet(
-        _os.path.join(sf_dir, "documents.parquet")
-    ).schema
+    batch_schema = parquet_schema(
+        spark, _os.path.join(sf_dir, "documents.parquet")
+    )
     stream = (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -14,35 +14,27 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from finance_etl_spark.io.readers import normalize_event_ts, parquet_schema
+from finance_etl_spark.io.sinks import read_existing_keys
 from finance_etl_spark.operators.incremental import incremental_new_records
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a file-source stream. The stream schema is
-    taken from a batch footer read (file-source streams require an
-    explicit schema), then ``ts`` is normalized to the session-TZ
-    instant type exactly like the batch reader (io/readers.py):
-    epoch-nanos LONG fixtures integer-divide to micros; TIMESTAMP_NTZ
-    fixtures cast (value-preserving under the UTC session)."""
-    from pyspark.sql.types import LongType, TimestampType
 
-    batch_schema = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a file-source stream. File-source streams
+    require an explicit schema; it is read from the table's footer
+    (``parquet_schema``), then ``ts`` is normalized to the session-TZ
+    instant type by the batch reader's own ``normalize_event_ts``."""
     raw = (
-        spark.readStream.schema(batch_schema)
+        spark.readStream.schema(
+            parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
+        )
         # the file source wants a directory: stream the sf dir, glob to
         # the one table file
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = batch_schema["ts"].dataType
-    if isinstance(ts_type, LongType):
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif not isinstance(ts_type, TimestampType):
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_event_ts(raw)
 
 
 def run_stream_to_memory(
@@ -85,10 +77,7 @@ def idempotent_append_batch(
 
     spark = batch_df.sparkSession
     keyed = with_surrogate_key(batch_df, key_cols)
-    try:
-        existing = spark.read.parquet(sink_dir).select("surrogate_key")
-    except Exception:  # first batch: empty sink -> pass-through
-        existing = None
+    existing = read_existing_keys(spark, sink_dir)  # None on the first batch
     new = keyed if existing is None else incremental_new_records(keyed, existing)
     new = new.cache()
     n = new.count()

@@ -1,11 +1,12 @@
 """DDL (X1-X3), parquet sink (D1-D4), and the UDF/UDTF API surfaces."""
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from finance_etl_spark.io.ddl import build_schema, recreate_tables
-from finance_etl_spark.io.sinks import append_new_records
+from finance_etl_spark.io.sinks import append_new_records, read_existing_keys
 from finance_etl_spark.operators.incremental import with_surrogate_key
 
 FIELDS = {
@@ -49,6 +50,18 @@ def test_parquet_sink_incremental(spark, tmp_path):
     )
     assert append_new_records(more, sink) == 1  # only 'z' is new
     assert spark.read.parquet(sink).count() == 3
+
+
+def test_corrupt_sink_raises_instead_of_rewriting(spark, tmp_path):
+    sink = tmp_path / "t"
+    assert read_existing_keys(spark, str(sink)) is None  # no sink yet
+    df = with_surrogate_key(spark.createDataFrame([Row(a="x", v=1)]).coalesce(1), ["a"])
+    assert append_new_records(df, str(sink)) == 1
+    (part,) = [p for p in sink.iterdir() if p.name.startswith("part-")]
+    part.write_bytes(b"not a parquet file")
+    (sink / f".{part.name}.crc").unlink()  # let the reader see the bytes
+    with pytest.raises(Py4JJavaError, match="is not a Parquet file"):
+        append_new_records(df, str(sink))
 
 
 def test_rowwise_udf_agrees_with_builtin(spark, sf_dir):

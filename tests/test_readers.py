@@ -1,0 +1,114 @@
+"""Footer-resolved table schemas (``io.readers.parquet_schema``) are the
+schemas Spark's inference job would return, and ``load_table`` reads the
+same rows with them while launching no Spark job."""
+
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from finance_etl_spark.io.readers import (
+    TABLES,
+    load_table,
+    normalize_event_ts,
+    parquet_schema,
+)
+
+from conftest import SF_DIR
+
+SF_DIRS = [
+    os.path.join(os.path.dirname(SF_DIR), f"sf{sf}") for sf in ("0.001", "0.01", "0.1")
+]
+
+
+def _inferred(spark, sf_dir, name):
+    """``load_table`` as written with ``spark.read.parquet`` inference."""
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return normalize_event_ts(df) if name == "events" else df
+
+
+def _assert_same(got, want):
+    assert got.schema == want.schema
+    # Multiset equality computed in the JVM: sf0.1 lineitem is 600k rows.
+    assert got.count() == want.count()
+    assert got.exceptAll(want).isEmpty()
+    assert want.exceptAll(got).isEmpty()
+
+
+@pytest.mark.parametrize("name", TABLES)
+@pytest.mark.parametrize("sf_dir", SF_DIRS, ids=os.path.basename)
+def test_load_table_matches_inference(spark, sf_dir, name):
+    _assert_same(load_table(spark, sf_dir, name), _inferred(spark, sf_dir, name))
+
+
+def test_spark_written_multi_file_sink(spark, tmp_path):
+    (
+        spark.range(0, 3000, numPartitions=3)
+        .selectExpr("id AS surrogate_key", "CAST(id AS STRING) AS s", "id / 7 AS x")
+        .write.parquet(str(tmp_path / "sink.parquet"))
+    )
+    names = os.listdir(tmp_path / "sink.parquet")
+    assert "_SUCCESS" in names
+    assert sum(n.startswith("part-") for n in names) == 3
+    sf_dir = str(tmp_path)
+    _assert_same(load_table(spark, sf_dir, "sink"), _inferred(spark, sf_dir, "sink"))
+
+
+def test_partitioned_directory_keeps_partition_column(spark, tmp_path):
+    (
+        spark.range(0, 600, numPartitions=2)
+        .selectExpr("id", "CAST(id % 3 AS INT) AS k", "CAST(id % 2 AS STRING) AS d")
+        .write.partitionBy("k", "d")
+        .parquet(str(tmp_path / "parted.parquet"))
+    )
+    got = load_table(spark, str(tmp_path), "parted")
+    assert got.columns == ["id", "k", "d"]
+    _assert_same(got, _inferred(spark, str(tmp_path), "parted"))
+
+
+def test_pyarrow_nanos_timestamp_reads_as_long(spark, tmp_path):
+    ts = [1_700_000_000_123_456_789, 1_600_000_000_000_000_001, 0]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("ns")),
+                "value": pa.array([1.5, -2.0, 0.0]),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    raw = parquet_schema(spark, str(tmp_path / "events.parquet"))
+    assert isinstance(raw["ts"].dataType, LongType)
+    got = load_table(spark, str(tmp_path), "events")
+    _assert_same(got, _inferred(spark, str(tmp_path), "events"))
+    micros = [r[0] for r in got.orderBy("event_id").select(F.unix_micros("ts")).collect()]
+    assert micros == [t // 1000 for t in ts]
+
+
+def test_missing_path_raises_file_not_found(spark, tmp_path):
+    with pytest.raises(FileNotFoundError):
+        parquet_schema(spark, str(tmp_path / "absent.parquet"))
+    os.makedirs(tmp_path / "empty.parquet")
+    (tmp_path / "empty.parquet" / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(FileNotFoundError):
+        parquet_schema(spark, str(tmp_path / "empty.parquet"))
+
+
+def test_load_table_launches_no_job(spark, sf_dir):
+    sc = spark.sparkContext
+    group = f"test-readers-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table job count")
+    try:
+        for name in TABLES:
+            load_table(spark, sf_dir, name)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the counter does see inference's job
+        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
