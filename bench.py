@@ -11,9 +11,10 @@ timed $SPARK_GRAFT_BENCH_RUNS times (default 5) reporting the MINIMUM —
 steady-state cost, robust to host-level noise on shared VMs. Default
 raised 3 -> 5 in round 12: C2 JIT of the biggest generated classes
 (ml_bagging_oob's 16-ladder codegen) measurably persists through 3
-runs (~4.1 s min-of-3 vs 3.1 s once warm, measured quiet in
-tools/bagging_profile.py), so 3 runs report warm-up, not plan cost —
-the same reason JMH separates warm-up from measurement iterations.
+runs (~4.1 s min-of-3 vs 3.1 s once warm, measured quiet; rerun with
+`tools/probe.py time ml_bagging_oob --runs 5`), so 3 runs report
+warm-up, not plan cost — the same reason JMH separates warm-up from
+measurement iterations.
 """
 
 from __future__ import annotations

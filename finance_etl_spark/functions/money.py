@@ -151,12 +151,12 @@ def dsum_cents(col: Column | str, k: int) -> Column:
     long column c == round(x·k) exactly for every row (cents(), or an
     integer product of cents columns whose decimal(30,10) cast of the
     double twin equals the exact rational — verify per expression, see
-    tools/q1_cents_verify.py), then SUM(c) / k is the same rational as
-    the decimal sum, so the presented double is the same correctly
-    rounded value. SUM accumulates in DECIMAL(38,0) — the compact-long
-    fast path until a partial sum exceeds 2^63·1e-18, overflow-safe at
-    any SF — and ONE exact decimal division per group restores the
-    scale. decimal(30,0) / k plans with adjusted scale
+    tests/test_recipes.py::test_q1_cents_exact_per_row), then SUM(c) / k
+    is the same rational as the decimal sum, so the presented double is
+    the same correctly rounded value. SUM accumulates in DECIMAL(38,0) —
+    the compact-long fast path until a partial sum exceeds 2^63·1e-18,
+    overflow-safe at any SF — and ONE exact decimal division per group
+    restores the scale. decimal(30,0) / k plans with adjusted scale
     max(38 - 30, 6) ≥ 6 under allowPrecisionLoss, whatever decimal
     width the literal k folds to, so the quotient is exact for
     k ≤ 10^6 (its true scale is ≤ 6). No per-row BigDecimal work

@@ -15,8 +15,6 @@ Nothing in the engine's hot query paths uses 4 or 5.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -69,10 +67,3 @@ class SplitWords:
             if tok:
                 yield doc_id, pos, tok
                 pos += 1
-
-
-def mean_byte_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body used by the multimodal decode stub — see
-    plans/multimodal.py for the registered query."""
-    for pdf in batches:
-        yield pdf

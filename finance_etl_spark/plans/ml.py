@@ -1396,10 +1396,6 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CORR_FEATURES = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-_CORR_FORMULA = (
-    "(n_d * sxy - sx * sy)"
-    " / sqrt((n_d * sxx - sx * sx) * (n_d * syy - sy * sy))"
-)
 
 
 @register(
@@ -5257,7 +5253,7 @@ def _bagging_pipeline(spark: SparkSession, sf_dir: str, w_sql) -> DataFrame:
     Column API produced (pinned by the unchanged hash oracle and plan-
     shape tests), so the physical plan and results are identical; only
     the per-run Python build cost drops — measured min-of-5 bench
-    wall 4.04 s -> ~3.1 s at sf0.1 (tools/r15_profile.py: build
+    wall 4.04 s -> ~3.1 s at sf0.1 (`tools/probe.py time`: build
     1.55 s -> ~0.35 s, exec unchanged)."""
     from pyspark.sql import Window
 
@@ -5269,8 +5265,8 @@ def _bagging_pipeline(spark: SparkSession, sf_dir: str, w_sql) -> DataFrame:
     # Group by the NUMERIC key triple and synthesize the string key
     # AFTER the agg: the exchange ships 3 longs + 2 ints per row
     # instead of a ~25-byte string. Round-12 head-to-head adjudication
-    # of the round-11 advisor's regression claim (tools/
-    # bagging_profile.py, sf0.1, min-of-3 in ONE session): numeric-key
+    # of the round-11 advisor's regression claim (a stage profile at
+    # sf0.1, min-of-3 in ONE session): numeric-key
     # base 3.24 s vs string-key base 6.87 s; full query numeric 3.11 s
     # vs string 5.42 s — the numeric shape IS faster, the advisor's
     # suspected key-shape regression is refuted. Decomposed floor
@@ -5535,14 +5531,14 @@ def ml_bagging_oob_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not a drop-in — v1 keeps its name, oracle, and driver history;
     the headline/bench pointer briefly moved here in round 13 and was
     REVERTED to v1 in round 14 on the evidence. Honest measurement —
-    the committed artifact BAGGING_V1V2.json (round-14,
-    tools/bagging_v1v2_adjudicate.py: quiet host, 1-min loadavg 0.13
-    at launch, single session, BOTH variants warmed, then TEN
-    alternating back-to-back pairs so neither JIT nor load drift can
-    bias a side): end-to-end the two are STATISTICALLY TIED at sf0.1
+    the committed artifact BAGGING_V1V2.json (round-14: quiet host,
+    1-min loadavg 0.13 at launch, single session, BOTH variants warmed,
+    then TEN alternating back-to-back pairs so neither JIT nor load
+    drift can bias a side; rerun with `tools/probe.py ab ml_bagging_oob
+    ml_bagging_oob_v2`): end-to-end the two are STATISTICALLY TIED at sf0.1
     — v2 min 2.055 s vs v1 min 2.069 s, mean per-pair delta +0.011 s,
     v2 wins 4/10 load-controlled pairs. The DRAW stage is genuinely
-    cheaper (base 2.35 s vs 3.24 s, tools/bagging_profile.py — 8x
+    cheaper (base 2.35 s vs 3.24 s in a stage profile — 8x
     less hashing), but the histogram shuffle + OOB census dominate
     end-to-end at this SF, so the stage win does not move the total;
     earlier same-session comparisons that showed a v2 "win" (or the

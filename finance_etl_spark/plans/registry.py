@@ -5,8 +5,9 @@ semantics are ANSI-SQL-expressible, an equivalent DuckDB SQL string used
 as a differential-testing oracle (row count + schema + order-insensitive
 value hash at sf0.01).
 
-Cross-engine float determinism contract (validated empirically in
-tools/float_experiment.py):
+Cross-engine float determinism contract (pinned per recipe by
+tests/test_recipes.py::test_spark_half_matches_duckdb_twin, e.g. its
+``dsum`` case):
 - Order-dependent reductions over doubles (sum/avg) are computed in
   DECIMAL(30,10) — exact, order- and partition-independent — and cast
   to double for presentation. On the DuckDB side the final cast routes

@@ -66,14 +66,14 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst-case IEEE error of p·(1−d) is < 3.5e-11 and of
     p·(1−d)·(1+t) < 6.4e-11 against a 5e-11 half-grid — the first is a
     theorem, the second is verified per row over every SF
-    (tools/q1_cents_verify.py: 0 mismatches / 666k rows), and the
-    oracle hash gate re-proves it end to end. Sums accumulate in
-    DECIMAL(38,0) (compact-long fast path, overflow-safe at any SF)
-    with one exact decimal division per group at the 4-row edge. The
-    win is per-row long arithmetic replacing BigDecimal casts; the
-    shuffle still carries decimal(38,0) partial-sum buffers, and the
-    round-robin exchange below the cents projection carries the raw
-    doubles.
+    (tests/test_recipes.py::test_q1_cents_exact_per_row: 0 mismatches
+    over 666k rows), and the oracle hash gate re-proves it end to end.
+    Sums accumulate in DECIMAL(38,0) (compact-long fast path,
+    overflow-safe at any SF) with one exact decimal division per group
+    at the 4-row edge. The win is per-row long arithmetic replacing
+    BigDecimal casts; the shuffle still carries decimal(38,0)
+    partial-sum buffers, and the round-robin exchange below the cents
+    projection carries the raw doubles.
     """
     from finance_etl_spark.io.readers import load_table_parallel
 

@@ -1,0 +1,86 @@
+"""tools/probe.py: each of its four modes, run once at sf0.001 through the
+command line, prints the fields its callers read and exits as documented.
+
+Each call is its own process: the probe needs a session whose stage
+history it started (see probe.RETAINED_STAGES), not the suite's."""
+
+import json
+import os
+import pathlib
+import subprocess
+import sys
+
+import pytest
+from pyspark.sql import functions as F
+
+TOOLS = pathlib.Path(__file__).resolve().parent.parent / "tools"
+# a test must not wait for a quiet host
+MAIN = "import sys, probe; probe.GATE_TIMEOUT_S = 0.0; raise SystemExit(probe.main(sys.argv[1:]))"
+
+
+@pytest.fixture
+def run(sf_dir):
+    def go(*argv):
+        out = subprocess.run(
+            [sys.executable, "-c", MAIN, *argv, "--sf", sf_dir, "--runs", "1"],
+            cwd=TOOLS,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        recs = [json.loads(x) for x in out.stdout.splitlines() if x.startswith("{")]
+        assert recs, out.stderr[-2000:]
+        return out.returncode, recs
+
+    return go
+
+
+def test_time_reports_build_sink_split_and_jobs(run):
+    code, [rec] = run("time", "q1_pricing_summary")
+    assert code == 0
+    assert rec["query"] == "q1_pricing_summary"
+    assert rec["build_s"] > 0 and rec["sink_s"] > 0
+    assert rec["total_s"] == pytest.approx(rec["build_s"] + rec["sink_s"], abs=2e-3)
+    assert rec["eager_jobs"] >= 0 and rec["sink_jobs"] >= 1
+    assert rec["stages"] >= rec["sink_jobs"]
+    assert rec["cached_bytes_left"] == 0
+    assert len(rec["runs_total_s"]) == 1
+
+
+def test_ab_same_rows_exits_zero(run):
+    code, [rec] = run("ab", "q1_pricing_summary", "q1_pricing_summary")
+    assert code == 0
+    assert rec["rows_equal"] and rec["rows"][0] > 0
+    assert len(rec["a_s"]) == len(rec["b_s"]) == 1
+
+
+def test_ab_different_rows_exits_nonzero(run, tmp_path):
+    arm = tmp_path / "arm.py"  # an arm kept outside the repo
+    arm.write_text(
+        "from finance_etl_spark import plans\n"
+        "def q3(spark, sf_dir):\n"
+        "    return plans.get('q3_shipping_priority').build(spark, sf_dir)\n"
+    )
+    code, [rec] = run("ab", "q1_pricing_summary", f"{arm}:q3")
+    assert code == 1
+    assert not rec["rows_equal"]
+
+
+def test_scale_derives_key_shifted_copies(run, spark, sf_dir, tmp_path):
+    code, [rec] = run("scale", "q1_pricing_summary", "--copies", "2", "--out", str(tmp_path))
+    assert code == 0
+    assert rec["copies"] == 2 and rec["ratio"] > 0
+    src = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    big = spark.read.parquet(os.path.join(rec["derived_dir"], "lineitem.parquet"))
+    assert big.count() == 2 * src.count()
+    # each copy holds the source's orderkeys, so disjoint copies double the distinct count
+    n_keys = src.agg(F.countDistinct("l_orderkey")).first()[0]
+    assert big.agg(F.countDistinct("l_orderkey")).first()[0] == 2 * n_keys
+
+
+def test_plans_writes_one_explain_file(run, tmp_path):
+    out = tmp_path / "plans"
+    code, [rec] = run("plans", "q1_pricing_summary", "--out", str(out))
+    assert code == 0
+    assert os.listdir(out) == ["q1_pricing_summary.txt"]
+    assert "== Physical Plan ==" in (out / "q1_pricing_summary.txt").read_text()

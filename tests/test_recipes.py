@@ -39,6 +39,7 @@ from finance_etl_spark.session import PERF_CONFS, RUNTIME_CONFS, configure
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 from check import canon  # noqa: E402
+from conftest import SF_DIR  # noqa: E402
 
 PKG = REPO / "finance_etl_spark"
 RECIPE_HOMES = {PKG / "functions" / "money.py", PKG / "plans" / "recipes.py"}
@@ -278,6 +279,43 @@ def test_cents_half_up_both_signs(spark):
         for v in vals
     ]
     assert got == want
+
+
+@pytest.mark.parametrize("sf", ("sf0.001", "sf0.01", "sf0.1"))
+def test_q1_cents_exact_per_row(spark, sf):
+    """q1_pricing_summary sums money as cents-scaled longs
+    (money.dsum_cents). That equals dsum only if, on every row, the
+    decimal(30,10) cast of each double expression is the exact rational
+    its cents integer stands for. The raw columns hold by theorem; the
+    disc_price and charge products are checked here, row by row."""
+    li = load_table(spark, os.path.join(os.path.dirname(SF_DIR), sf), "lineitem")
+    qc, pc, dc, tc = (
+        cents(c) for c in ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    )
+    disc_i = pc * (100 - dc)
+    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    pairs = {
+        "qty": (F.col("l_quantity"), qc, 100),
+        "price": (F.col("l_extendedprice"), pc, 100),
+        "discount": (F.col("l_discount"), dc, 100),
+        "disc_price": (disc, disc_i, 10_000),
+        "charge": (disc * (1 + F.col("l_tax")), disc_i * (100 + tc), 1_000_000),
+    }
+
+    def exact(c, k):  # the rational c / k at dsum's decimal(30,10)
+        return (c.cast("decimal(30,0)") / F.lit(k).cast("decimal(9,0)")).cast(
+            "decimal(30,10)"
+        )
+
+    row = li.select(
+        *[
+            F.sum((dbl.cast("decimal(30,10)") != exact(c, k)).cast("long")).alias(name)
+            for name, (dbl, c, k) in pairs.items()
+        ],
+        F.count(F.lit(1)).alias("n_rows"),
+    ).first()
+    assert row["n_rows"] > 0
+    assert {name: row[name] for name in pairs} == dict.fromkeys(pairs, 0)
 
 
 class _FakeConf:
