@@ -7,7 +7,10 @@ driver memory). Here each (mapping_type, bank) group becomes ONE
 distributed ``spark.read.csv`` over a glob — thousands of files scan in
 parallel, filename metadata is derived per-row with
 ``input_file_name()`` + ``regexp_extract`` (S3), and the per-group
-lineages are unioned lazily (U1). Nothing materializes on the driver.
+lineages are unioned lazily (U1). Nothing materializes on the driver,
+and building the lineage launches no Spark job: each group's header
+line is read on the driver (``io.readers.csv_header_schema``) instead
+of by schema inference's jobs.
 
 Semantics preserved from the reference:
 - filename regex with exactly 3 groups -> (bank, acc_type,
@@ -30,6 +33,7 @@ from pyspark.sql import functions as F
 from finance_etl_spark.functions.datetime import strftime_to_java
 from finance_etl_spark.functions.keys import surrogate_key
 from finance_etl_spark.ingest.config import FileGroupConfig, IngestConfig
+from finance_etl_spark.io.readers import csv_header_schema
 
 _BASENAME_RE = "([^/]+)$"
 
@@ -47,21 +51,28 @@ def _map_literal(d: dict) -> F.Column:
 
 def read_group(
     spark: SparkSession, data_dir: str, cfg: FileGroupConfig, file_pattern: str
-) -> DataFrame:
+) -> DataFrame | None:
     """One distributed CSV read per (mapping_type, bank) group (S1+S2),
     with filename metadata extraction (S3) and header rename (P1+P2).
+    None when no file in ``data_dir`` matches the group's glob (or none
+    has a header line): the group contributes no rows.
 
     All columns are read as strings (schema-on-read like the reference;
     typed parsing happens in the transform stage so the surrogate key
-    can hash raw values)."""
-    glob = f"{cfg.bank}_*_{cfg.mapping_type}_*.csv"
-    df = (
-        spark.read.option("header", True)
-        .option("sep", cfg.csv_separator)
-        .option("inferSchema", False)
-        .option("pathGlobFilter", glob)
-        .csv(data_dir)
-    )
+    can hash raw values). The schema comes from the driver
+    (``csv_header_schema``: the header line Spark's own inference would
+    pick, named by Spark's own tokenizer), so the read launches no Spark
+    job. ``enforceSchema`` keeps its default: every file's first line is
+    skipped as a header and its columns are taken by position."""
+    options = {
+        "header": "true",
+        "sep": cfg.csv_separator,
+        "pathGlobFilter": f"{cfg.bank}_*_{cfg.mapping_type}_*.csv",
+    }
+    schema = csv_header_schema(spark, data_dir, options)
+    if schema is None:
+        return None
+    df = spark.read.schema(schema).options(**options).csv(data_dir)
     file_name = F.regexp_extract(F.input_file_name(), _BASENAME_RE, 1)
     df = df.withColumn("file_name", file_name)
     # S3: validate against the 3-group pattern; extract acc_type.
@@ -156,12 +167,16 @@ def run_ingest(
     spark: SparkSession, data_dir: str, config: IngestConfig
 ) -> dict[str, DataFrame]:
     """Full extract+transform: one lazy lineage per mapping_type,
-    unioned across banks (U1). Returns {'stm': DF, 'sec': DF, ...}."""
+    unioned across banks (U1). Returns {'stm': DF, 'sec': DF, ...}.
+    A configured group with no file in ``data_dir`` contributes no rows,
+    as in the reference's per-file loop; a mapping_type with no file at
+    all is absent from the result."""
     by_type: dict[str, DataFrame] = {}
     for cfg in config.groups:
-        part = transform_group(
-            read_group(spark, data_dir, cfg, config.file_pattern), cfg
-        )
+        raw = read_group(spark, data_dir, cfg, config.file_pattern)
+        if raw is None:
+            continue
+        part = transform_group(raw, cfg)
         acc = by_type.get(cfg.mapping_type)
         by_type[cfg.mapping_type] = part if acc is None else acc.unionByName(part)
     return by_type

@@ -14,7 +14,13 @@ import os
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType, TimestampType
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 TABLES = (
     "region",
@@ -89,6 +95,72 @@ def _first_data_file(hconf, path):
         elif not name.startswith(("_", ".")):
             return st.getPath()
     return None
+
+
+def csv_header_schema(
+    spark: SparkSession, data_dir: str, options: dict[str, str]
+) -> StructType | None:
+    """The all-string schema ``spark.read.options(**options).csv(data_dir)``
+    would infer, ``options`` holding ``header`` and ``pathGlobFilter``,
+    without the Spark jobs inference launches. None when no non-empty
+    file under ``data_dir`` matches the glob or none holds a non-blank
+    line.
+
+    Inference takes the first non-blank, non-comment line of the first
+    file split, and Spark orders splits largest first (ties keep listing
+    order). A split is at most ``maxSplitBytes``, so among files larger
+    than that the first listed wins. That line is read here through
+    Hadoop's ``FileSystem`` (``CSVUtils.readHeaderLine``), tokenized by
+    univocity under the read's ``CSVOptions`` and named by
+    ``CSVUtils.makeSafeHeader``, the calls inference makes, so BOMs,
+    quoting, duplicate and empty names come out the same."""
+    Path, GlobFilter, PythonUtils, CSVOptions, CsvParser, CSVUtils = (
+        JavaClass(name, spark.sparkContext._gateway._gateway_client)
+        for name in _CSV_HEADER_CLASSES
+    )
+    jspark = spark._jsparkSession
+    state = jspark.sessionState()
+    conf = state.conf()
+    hconf = state.newHadoopConf()
+    root = Path(data_dir)
+    statuses = root.getFileSystem(hconf).listStatus(
+        root, GlobFilter(options["pathGlobFilter"])
+    )
+    files = [(n, st) for st in statuses if (n := st.getLen()) > 0]
+    if not files:
+        return None
+    # FilePartition.maxSplitBytes over the matched files
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (
+        min_parts.get() if min_parts.isDefined()
+        else jspark.leafNodeDefaultParallelism()
+    )
+    total = sum(n + open_cost for n, _ in files)
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, total // min_parts))
+    files.sort(key=lambda f: -min(f[0], split))
+    opts = CSVOptions(
+        PythonUtils.toScalaMap(options),
+        conf.csvColumnPruning(),
+        conf.sessionLocalTimeZone(),
+    )
+    for _, st in files:
+        line = CSVUtils.readHeaderLine(st.getPath(), opts, hconf)
+        if line.isDefined():
+            row = CsvParser(opts.asParserSettings()).parseLine(line.get())
+            names = CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis(), opts)
+            return StructType([StructField(n, StringType()) for n in names])
+    return None
+
+
+_CSV_HEADER_CLASSES = (
+    "org.apache.hadoop.fs.Path",
+    "org.apache.hadoop.fs.GlobFilter",
+    "org.apache.spark.api.python.PythonUtils",
+    "org.apache.spark.sql.catalyst.csv.CSVOptions",
+    "com.univocity.parsers.csv.CsvParser",
+    "org.apache.spark.sql.execution.datasources.csv.CSVUtils",
+)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

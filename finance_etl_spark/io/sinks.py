@@ -6,13 +6,14 @@ generalized over two backends:
   driver jar on the classpath — adapters below, exercised only where
   a driver is present)
 
-The incremental contract (key scan -> anti-join -> append-if-nonempty)
+The incremental contract (key scan -> anti-join -> append the new rows)
 is identical across backends; only the physical reader/writer differs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from finance_etl_spark.io.readers import parquet_schema
 from finance_etl_spark.operators.incremental import incremental_new_records
@@ -41,20 +42,24 @@ def read_existing_keys(
 def append_new_records(
     source: DataFrame, path: str, key_col: str = "surrogate_key"
 ) -> int:
-    """D3+D4+J1: anti-join against existing keys, append only new rows,
-    skip the write when nothing is new. Returns rows written."""
+    """D3+D4+J1: anti-join against existing keys and append only the
+    new rows, in one Spark job besides the key broadcast. Returns rows
+    written, counted by an ``Observation`` on the written rows.
+
+    D4 (conditional load) holds for rows, not files: a batch with no
+    new key adds 0 rows and returns 0, but Spark still commits one
+    schema-only part file, as it does for every empty write partition.
+    The sink stays readable by ``read_existing_keys``. Skipping that
+    file would need a second job over the batch before the write."""
     existing = read_existing_keys(source.sparkSession, path, key_col)
     new = source if existing is None else incremental_new_records(
         source, existing, key_col
     )
-    new = new.cache()
-    try:
-        n = new.count()
-        if n:  # D4: conditional load
-            new.write.mode("append").parquet(path)
-        return n
-    finally:
-        new.unpersist()
+    # unnamed: concurrent or nested appends cannot share a metric name
+    seen = Observation()
+    counted = new.observe(seen, F.count(F.lit(1)).alias("n"))
+    counted.write.mode("append").parquet(path)
+    return seen.get["n"]
 
 
 # --- JDBC (reference parity; needs a driver jar) ----------------------------

@@ -16,8 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from finance_etl_spark.io.readers import normalize_event_ts, parquet_schema
-from finance_etl_spark.io.sinks import read_existing_keys
-from finance_etl_spark.operators.incremental import incremental_new_records
+from finance_etl_spark.io.sinks import append_new_records
+from finance_etl_spark.operators.incremental import with_surrogate_key
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,25 +66,15 @@ def run_stream_to_memory(
 def idempotent_append_batch(
     batch_df: DataFrame, sink_dir: str, key_cols: list[str]
 ) -> int:
-    """foreachBatch body: stamp surrogate keys, anti-join against the
-    sink's existing keys, append only new rows. Returns rows written.
+    """foreachBatch body: stamp surrogate keys, then append only the
+    rows whose key the sink lacks (``io.sinks.append_new_records``).
+    Returns rows written.
 
     Parquet-append is used for the fixture sink; swap for Delta
     ``MERGE WHEN NOT MATCHED`` where ACID is available — the anti-join
     contract is identical.
     """
-    from finance_etl_spark.operators.incremental import with_surrogate_key
-
-    spark = batch_df.sparkSession
-    keyed = with_surrogate_key(batch_df, key_cols)
-    existing = read_existing_keys(spark, sink_dir)  # None on the first batch
-    new = keyed if existing is None else incremental_new_records(keyed, existing)
-    new = new.cache()
-    n = new.count()
-    if n:
-        new.write.mode("append").parquet(sink_dir)
-    new.unpersist()
-    return n
+    return append_new_records(with_surrogate_key(batch_df, key_cols), sink_dir)
 
 
 def stateful_user_totals(stream_df: DataFrame):

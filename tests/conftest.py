@@ -19,3 +19,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn, *args)`` -> (fn's result, Spark jobs it launched),
+    counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn, *args):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn(*args)
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return run

@@ -52,6 +52,40 @@ def test_parquet_sink_incremental(spark, tmp_path):
     assert spark.read.parquet(sink).count() == 3
 
 
+def test_append_contract(spark, tmp_path, count_jobs):
+    """The returned count is what the sink gained; with a sink present
+    an append is the key broadcast plus the write, nothing is left
+    cached, and a zero-new re-run keeps the sink as it was."""
+    sink = str(tmp_path / "t")
+    sc = spark.sparkContext
+
+    def cached_bytes():  # other tests may have left their own
+        return sum(i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo())
+
+    def rows_and_keys():
+        got = spark.read.parquet(sink).agg(
+            F.count(F.lit(1)), F.countDistinct("surrogate_key")
+        ).first()
+        return tuple(got)
+
+    def batch(lo, hi):
+        return with_surrogate_key(
+            spark.range(lo, hi).select(F.col("id").cast("string").alias("a")), ["a"]
+        )
+
+    assert append_new_records(batch(0, 50), sink) == 50
+    assert rows_and_keys() == (50, 50)
+    for lo, hi in [(40, 120), (100, 130)]:
+        before, cached_before = rows_and_keys()[0], cached_bytes()
+        n, jobs = count_jobs(append_new_records, batch(lo, hi), sink)
+        assert cached_bytes() <= cached_before
+        assert n == rows_and_keys()[0] - before == hi - max(lo, before)
+        assert jobs <= 2
+    assert append_new_records(batch(0, 130), sink) == 0  # zero-new re-run
+    assert rows_and_keys() == (130, 130)
+    assert read_existing_keys(spark, sink).count() == 130
+
+
 def test_corrupt_sink_raises_instead_of_rewriting(spark, tmp_path):
     sink = tmp_path / "t"
     assert read_existing_keys(spark, str(sink)) is None  # no sink yet

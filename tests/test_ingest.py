@@ -1,9 +1,14 @@
 """Ingest-parity semantics on the committed CSV fixtures."""
 
+import os
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from finance_etl_spark.plans.ingest_parity import CONFIG, FIX_DIR
 from finance_etl_spark.ingest import run_ingest
+from finance_etl_spark.io.readers import csv_header_schema
 
 
 def test_skip_semantics(spark):
@@ -18,6 +23,104 @@ def test_skip_semantics(spark):
         "alpha_current_stm_20250102.csv",
         "beta_savings_stm_20250103.csv",
     }
+
+
+def test_group_without_files_contributes_no_rows(spark, tmp_path):
+    """Configured groups with no file in the drop zone are skipped like
+    the reference's per-file loop skips them; a mapping type with no
+    file at all is absent."""
+    name = "alpha_current_stm_20250101.csv"
+    shutil.copy(os.path.join(FIX_DIR, name), tmp_path / name)
+    out = run_ingest(spark, str(tmp_path), CONFIG)
+    assert set(out) == {"stm"}
+    rows = out["stm"].collect()
+    assert {r.file_name for r in rows} == {name}
+    with open(os.path.join(FIX_DIR, name)) as f:
+        assert len(rows) == len(f.read().splitlines()) - 1
+
+
+def _options(sep=";", glob="*.csv"):
+    return {"header": "true", "sep": sep, "pathGlobFilter": glob}
+
+
+def _assert_inference_identity(spark, data_dir, options):
+    """The driver-side schema equals Spark's inferred one, and reading
+    with it gives inference's rows."""
+    schema = csv_header_schema(spark, data_dir, options)
+    inferred = spark.read.options(**options).csv(data_dir)
+    assert schema == inferred.schema
+    got = spark.read.schema(schema).options(**options).csv(data_dir)
+    assert sorted(got.collect()) == sorted(inferred.collect())
+    return schema.names
+
+
+@pytest.mark.parametrize(
+    "cfg", CONFIG.groups, ids=lambda g: f"{g.mapping_type}-{g.bank}"
+)
+def test_header_matches_inference_on_fixtures(spark, cfg):
+    glob = f"{cfg.bank}_*_{cfg.mapping_type}_*.csv"
+    names = _assert_inference_identity(
+        spark, FIX_DIR, _options(cfg.csv_separator, glob)
+    )
+    assert set(cfg.original_fields) <= set(names)
+
+
+@pytest.mark.parametrize(
+    "body, names",
+    [
+        ("\ufeffA;B;C\n1;2;3\n", ["A", "B", "C"]),  # UTF-8 BOM
+        ('A;"x;y";C\n1;2;3\n', ["A", "x;y", "C"]),  # quoted separator
+        ("a;B;B;;b\n1;2;3;4;5\n", ["a", "B1", "B2", "_c3", "b4"]),
+        ("A;B;C\r\n1;2;3\r\n", ["A", "B", "C"]),  # CRLF
+        ("\n  \nA;B;C\n1;2;3\n", ["A", "B", "C"]),  # leading blank lines
+    ],
+    ids=["bom", "quoted-sep", "duplicate-and-empty", "crlf", "leading-blank"],
+)
+def test_header_matches_inference_on_edge_files(spark, tmp_path, body, names):
+    (tmp_path / "x.csv").write_bytes(body.encode("utf-8"))
+    assert _assert_inference_identity(spark, str(tmp_path), _options()) == names
+
+
+def _write_headed(d, sizes):
+    """One file per size, each with its own header; -> {name: header}."""
+    headers = {}
+    for i, n in enumerate(sizes):
+        headers[f"f{i}.csv"] = [f"h{i}a", f"h{i}b"]
+        (d / f"f{i}.csv").write_text(f"h{i}a;h{i}b\n" + "1;2\n" * n)
+    return headers
+
+
+def test_header_of_largest_file_wins(spark, tmp_path):
+    headers = _write_headed(tmp_path, [3, 30, 10])
+    names = _assert_inference_identity(spark, str(tmp_path), _options())
+    assert names == headers["f1.csv"]
+
+
+def test_header_tie_between_full_splits_keeps_listing_order(spark, tmp_path):
+    """Files larger than one split all open with a full-size split, so
+    inference reads the first listed, not the largest."""
+    headers = _write_headed(tmp_path, [3, 30, 10])
+    first = os.listdir(tmp_path)[0]
+    # make the first-listed file the smallest (listing order stays)
+    for name, header in headers.items():
+        rows = 3 if name == first else 30
+        (tmp_path / name).write_text(";".join(header) + "\n" + "1;2\n" * rows)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try:
+        names = _assert_inference_identity(spark, str(tmp_path), _options())
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert names == headers[first]
+
+
+def test_run_ingest_launches_no_job(spark, count_jobs):
+    _, jobs = count_jobs(run_ingest, spark, FIX_DIR, CONFIG)
+    assert jobs == 0
+    # the counter does see inference's jobs
+    _, jobs = count_jobs(spark.read.option("header", True).csv, FIX_DIR)
+    assert jobs >= 1
 
 
 def test_dirty_amount_coerces_to_null_and_sign_flip(spark):

@@ -91,21 +91,9 @@ def spark_ingest(root: str) -> int:
     from finance_etl_spark.session import get_spark
 
     spark = get_spark("ingest-bench")
-    from finance_etl_spark.ingest.config import IngestConfig
-
     cfg = load_config(
         os.path.join(os.path.dirname(os.path.dirname(__file__)),
                      "fixtures", "ingest_config.yaml")
-    )
-    # the generated corpus only holds the alpha stm group; config
-    # dispatch (S4) would try to read the other configured groups'
-    # empty globs
-    cfg = IngestConfig(
-        file_pattern=cfg.file_pattern,
-        groups=tuple(
-            g for g in cfg.groups
-            if g.mapping_type == "stm" and g.bank == "alpha"
-        ),
     )
     out = run_ingest(spark, root, cfg)
     return out["stm"].dropDuplicates(["surrogate_key"]).count()
