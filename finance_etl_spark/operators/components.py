@@ -8,9 +8,8 @@ itself and its neighbors; converged when no label changes. Rounds
 needed = graph diameter, which for near-dup graphs is small (duplicate
 clusters are dense cliques-of-chains, not long paths). Only the
 (node, label) relation — one row per distinct node, far smaller than
-the input corpus — carries state between rounds, and it is
-materialized (persist + count) per round so lineage stays bounded
-exactly as in plans/vectors.py::kmeans_centroids.
+the input corpus — carries state between rounds; operators/iterate.py
+checkpoints it every round, so each round's plan is one round deep.
 
 Scale notes (100 TB): the per-round cost is one shuffle join of the
 edge list against the label relation plus one min-aggregation — both
@@ -23,13 +22,28 @@ near-dup workload does not need it.
 Convergence is detected with a decimal sum of labels: labels only ever
 decrease, so the sum is strictly monotone until the fixed point —
 equality of consecutive sums IS convergence (no row-wise diff join
-needed, one tiny aggregate action per round).
+needed). The sum is observed on each round's checkpoint job, so the
+test launches no job of its own.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from finance_etl_spark.operators.iterate import iterate
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) for both orientations of every edge."""
+    return edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
+        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    )
+
+
+def _own_labels(sym: DataFrame) -> DataFrame:
+    """(node, label): every node labeled with its own id."""
+    return sym.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node"))
 
 
 def connected_components(
@@ -42,53 +56,30 @@ def connected_components(
     component_id = min node id in the component. Raises if not
     converged within ``max_rounds`` (see module docstring for the
     log-round alternative)."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .persist()
-    )
-    # localCheckpoint (not persist): each round's relation must replace
-    # its lineage entirely, or the logical plan nests one join+agg layer
-    # per round and Catalyst re-analyzes an exponentially growing tree
-    # (observed: driver heap OOM at ~11 rounds with persist alone).
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
-    # try/finally so the cached edge relation is released on EVERY exit
-    # path — including the non-convergence raise (long-lived sessions
-    # that catch the RuntimeError must not leak cached blocks)
+    sym = _symmetric(edges, src, dst).distinct().persist()
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        nbr_min = (
+            sym.join(labels, sym["b"] == labels["node"])
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        return labels.join(nbr_min, "node", "left").select(
+            "node", F.least("label", "nbr_label").alias("label")
+        )
+
+    # the cached edge relation is released on every exit path, the
+    # non-convergence raise included
     try:
-        for _ in range(max_rounds):
-            nbr_min = (
-                sym.join(labels, sym["b"] == labels["node"])
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            labels = (
-                labels.join(nbr_min, "node", "left")
-                .select(
-                    "node",
-                    F.least("label", "nbr_label").alias("label"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            cur_sum = labels.agg(
-                F.sum(F.col("label").cast("decimal(38,0)"))
-            ).collect()[0][0]
-            if cur_sum == prev_sum:
-                return labels.select("node", F.col("label").alias("component_id"))
-            prev_sum = cur_sum
-        raise RuntimeError(
-            f"connected_components: no convergence in {max_rounds} rounds "
-            "(graph diameter too large — use large-star/small-star)"
+        labels = iterate(
+            _own_labels(sym),
+            step,
+            max_rounds,
+            until=F.sum(F.col("label").cast("decimal(38,0)")),
         )
     finally:
         sym.unpersist()
+    return labels.select("node", F.col("label").alias("component_id"))
 
 
 def label_propagation(
@@ -108,45 +99,32 @@ def label_propagation(
 
     Per round: one edge⋈label join, one (node, label) count agg, one
     min_by pick — all hash-partitioned on node id, state is the
-    (node, label) relation, localCheckpoint per round bounds lineage
-    exactly as in connected_components above."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
+    (node, label) relation, checkpointed per round exactly as in
+    connected_components above."""
+    sym = _symmetric(edges, src, dst).distinct().persist()
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        nbr = (
+            sym.join(labels, sym["b"] == labels["node"])
+            .groupBy(F.col("a").alias("n2"), "label")
+            .agg(F.count(F.lit(1)).alias("votes"))
+        )
+        # most frequent neighbor label, smallest label on ties:
+        # min_by over the (-votes, label) lexicographic struct
+        pick = nbr.groupBy(F.col("n2").alias("node")).agg(
+            F.min_by(
+                "label", F.struct((-F.col("votes")).alias("nv"), "label")
+            ).alias("new_label")
+        )
+        return labels.join(pick, "node", "left").select(
+            "node", F.coalesce("new_label", "label").alias("label")
+        )
+
     try:
-        for _ in range(n_rounds):
-            nbr = (
-                sym.join(labels, sym["b"] == labels["node"])
-                .groupBy(F.col("a").alias("n2"), "label")
-                .agg(F.count(F.lit(1)).alias("votes"))
-            )
-            # most frequent neighbor label, smallest label on ties:
-            # min_by over the (-votes, label) lexicographic struct
-            pick = nbr.groupBy(F.col("n2").alias("node")).agg(
-                F.min_by(
-                    "label", F.struct((-F.col("votes")).alias("nv"), "label")
-                ).alias("new_label")
-            )
-            labels = (
-                labels.join(pick, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce("new_label", "label").alias("label"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        return labels.select("node", F.col("label").alias("community_id"))
+        labels = iterate(_own_labels(sym), step, n_rounds)
     finally:
         sym.unpersist()
+    return labels.select("node", F.col("label").alias("community_id"))
 
 
 def connected_components_star(
@@ -171,28 +149,12 @@ def connected_components_star(
 
     Both emit (v, m) pairs from a groupBy(u) + min-agg + posexploded
     neighbor list — hash-partitioned on node id, no driver state; the
-    edge relation is localCheckpoint'ed per round (same
-    lineage-reset reasoning as the propagation loop). Converged when
+    edge relation is checkpointed per round (same lineage-reset
+    reasoning as the propagation loop). Converged when
     the edge multiset stabilizes (decimal sum + count fingerprint —
     edges only ever move toward smaller minima, so the fingerprint is
     monotone until fixed point). At the fixed point the relation is a
     star forest: every node points at its component minimum."""
-    # symmetric, no self-loops
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = e.select(F.col("a").alias("node")).distinct().persist()
-
-    def fingerprint(df: DataFrame):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("a") + F.col("b")).cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        return (r["n"], r["s"])
 
     def star(df: DataFrame, large: bool) -> DataFrame:
         # neighbor lists per u (plus self), component-min per u
@@ -223,37 +185,26 @@ def connected_components_star(
             .distinct()
         )
 
-    prev = fingerprint(e)
-    try:
-        for _ in range(max_rounds):
-            # star passes need BOTH directions for neighborhoods: the
-            # relation is kept symmetric between rounds
-            e = star(e, large=True).localCheckpoint(eager=True)
-            e_sym = e.union(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            e = star(e_sym, large=False).localCheckpoint(eager=True)
-            e_sym = e.union(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            ).distinct().localCheckpoint(eager=True)
-            cur = fingerprint(e_sym)
-            if cur == prev:
-                break
-            prev = cur
-            e = e_sym
-        else:
-            raise RuntimeError(
-                f"connected_components_star: no convergence in {max_rounds}"
-            )
-        # fixed point: star forest. Each node's label = min neighbor
-        # (or itself for the center).
-        lab = (
-            e_sym.groupBy(F.col("a").alias("node"))
-            .agg(F.least(F.min("b"), F.col("node")).alias("component_id"))
-        )
-        return nodes.join(lab, "node", "left").select(
-            "node",
-            F.coalesce("component_id", F.col("node")).alias("component_id"),
-        )
-    finally:
-        nodes.unpersist()
+    def step(e_sym: DataFrame, _: int) -> DataFrame:
+        # star passes need BOTH directions for neighborhoods: the
+        # relation is kept symmetric between rounds
+        e = star(e_sym, large=True)
+        e = star(_symmetric(e, "a", "b"), large=False)
+        return _symmetric(e, "a", "b").distinct()
+
+    # symmetric, no self-loops
+    e_sym = iterate(
+        _symmetric(edges, src, dst).filter(F.col("a") != F.col("b")).distinct(),
+        step,
+        max_rounds,
+        until=(
+            F.count(F.lit(1)),
+            F.sum((F.col("a") + F.col("b")).cast("decimal(38,0)")),
+        ),
+    )
+    # fixed point: star forest. Each node's label = min neighbor (or
+    # itself for the center). Both rewrites keep every node of the
+    # input on some edge, so every node is an ``a`` here.
+    return e_sym.groupBy(F.col("a").alias("node")).agg(
+        F.least(F.min("b"), F.col("node")).alias("component_id")
+    )

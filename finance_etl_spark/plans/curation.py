@@ -30,6 +30,7 @@ from finance_etl_spark.operators.components import (
     connected_components,
     label_propagation,
 )
+from finance_etl_spark.operators.iterate import iterate
 from finance_etl_spark.plans.recipes import (
     GRAPH_EDGE_CTE,
     STRONG_TRADE_CTE,
@@ -1516,9 +1517,10 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes with a min-aggregate — per round ONE equi-join + one agg,
     both keyed shuffles, state bounded by |V|. Four rounds = the
     oracle's recursion bound. The same loop shape runs at web-graph
-    scale (edges never materialize to the driver); per-round
-    localCheckpoint would cap lineage exactly as operators/
-    components.py does — at |V|=25 rounds are cheap enough without.
+    scale (edges never materialize to the driver); at that scale the
+    rounds would run through operators/iterate.py, which checkpoints
+    each one to cap lineage — at |V|=25 an unrolled plan is cheap
+    enough without.
     Edge derivation shares the two-broadcast-join reduction with
     graph_triangle_count / graph_pagerank_trade."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -2976,8 +2978,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     spam-farm detector. Exact integer degrees make it hash-oracled via
     the same fixed-round CTE unrolling as graph_pagerank_trade. Each
     round is two degree aggregations + two semi-joins over the
-    shrinking edge set, localCheckpoint'd per round so the LOGICAL
-    plan stays one round deep — each round references the previous
+    shrinking edge set, checkpointed per round by iterate so the
+    LOGICAL plan stays one round deep — each round references the previous
     edge set three times, so an un-truncated lineage tree grows 3^r
     and Catalyst analysis alone went 1.4 s → 28 s by round 6
     (measured); with truncation rounds are flat. At 100 TB rounds
@@ -2985,25 +2987,22 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cur = (
+    edges = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint()
     )
-    for _ in range(_KCORE_ROUNDS):
+
+    def peel(cur: DataFrame, _: int) -> DataFrame:
         cd = cur.groupBy("c").agg(F.count(F.lit(1)).alias("cd")).filter(
             F.col("cd") >= _KCORE_K
         )
         sd = cur.groupBy("s").agg(F.count(F.lit(1)).alias("sd")).filter(
             F.col("sd") >= _KCORE_K
         )
-        cur = (
-            cur.join(cd.select("c"), "c")
-            .join(sd.select("s"), "s")
-            .select("c", "s")
-            .localCheckpoint()
-        )
+        return cur.join(cd.select("c"), "c").join(sd.select("s"), "s").select("c", "s")
+
+    cur = iterate(edges, peel, _KCORE_ROUNDS)
     out = (
         cur.groupBy("c")
         .agg(F.count(F.lit(1)).alias("degree"))

@@ -586,10 +586,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finance_etl_spark.functions.money import dsum
     from finance_etl_spark.io.ticksource import TickDataSource
 
-    try:
-        spark.dataSource.register(TickDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(TickDataSource)
     ticks = (
         spark.read.format("ticks")
         .option("parts", 8)

@@ -2299,6 +2299,20 @@ def _bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _checkpoint_under(confs: dict, build, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``build(spark, sf_dir)`` materialized by an eager localCheckpoint
+    while ``confs`` are set, then the session's own values restored: the
+    calibration confs shape this one plan and leak into no other."""
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        return build(spark, sf_dir).localCheckpoint()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 BLOOM_JOIN_CONFS = {
     # fixture-scale calibration: the injection rule requires the probe
     # side to scan > this threshold (default 10 GiB — sized for real
@@ -2335,14 +2349,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     confs are set, then the session confs are restored — no leakage
     into other queries' plans. Results are filter-invariant, so the
     plain-join oracle checks correctness."""
-    old = {k: spark.conf.get(k) for k in BLOOM_JOIN_CONFS}
-    for k, v in BLOOM_JOIN_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        return _bloom_filter_join(spark, sf_dir).localCheckpoint()
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+    return _checkpoint_under(BLOOM_JOIN_CONFS, _bloom_filter_join, spark, sf_dir)
 
 
 def _skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2417,18 +2424,10 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew you cannot predict at plan time (the manual salting operators
     in operators/skew.py are the plan-time answer). The executed plan
     shows SortMergeJoin(skew=true) — asserted in
-    tests/test_plan_shapes.py. Same conf-scoping discipline as
-    join_runtime_bloom_filter: calibration confs wrap an eager
-    localCheckpoint and are restored. Results are plan-invariant, so
-    the plain-join oracle checks correctness."""
-    old = {k: spark.conf.get(k) for k in AQE_SKEW_CONFS}
-    for k, v in AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        return _skew_join(spark, sf_dir).localCheckpoint()
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+    tests/test_plan_shapes.py. Same conf scoping as
+    join_runtime_bloom_filter (``_checkpoint_under``). Results are
+    plan-invariant, so the plain-join oracle checks correctness."""
+    return _checkpoint_under(AQE_SKEW_CONFS, _skew_join, spark, sf_dir)
 
 
 @register(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from finance_etl_spark.functions.money import as_d, o_fsum
 from finance_etl_spark.functions.vectors import cosine
 from finance_etl_spark.io.readers import load_table, load_table_parallel
+from finance_etl_spark.operators.iterate import iterate
 from finance_etl_spark.plans.recipes import (
     DAILY_Q6_SQL,
     GRAPH_EDGE_CTE,
@@ -937,14 +938,15 @@ def graph_ktruss_peel2(spark: SparkSession, sf_dir: str) -> DataFrame:
     of: peeling removes an edge, which erases triangles through its
     SURVIVORS, so single-round support over-counts the truss (this
     query's g1 vs g2 difference is exactly that cascade). Fixed
-    2-round unroll; each round is the same two equi-joins over the
+    2 rounds through operators/iterate.py, each checkpointed, so the
+    sink reads a materialized edge set; each round is the same two
+    equi-joins over the
     mirrored adjacency (O(|E|*avg_degree) wedges, vertex-keyed
     shuffles — never a cubic enumeration), so the pattern extends to
     convergence peeling by iterating the same stage. Final support is
     recounted INSIDE the surviving subgraph. All integers; same
     corpus-relative 60th-percentile edge set as graph_triangle_count
     (the quantile threshold twin is the proven round-13 idiom)."""
-    g = trade_edges_undirected(spark, sf_dir).persist()
 
     def support(edges: DataFrame) -> DataFrame:
         adj = edges.select(
@@ -961,14 +963,10 @@ def graph_ktruss_peel2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("s"))
         )
 
-    for _ in range(2):
-        sup = support(g)
-        g = (
-            g.join(sup, ["a", "b"])
-            .filter(F.col("s") >= 2)
-            .select("a", "b")
-            .persist()
-        )
+    def peel(g: DataFrame, _: int) -> DataFrame:
+        return g.join(support(g), ["a", "b"]).filter(F.col("s") >= 2).select("a", "b")
+
+    g = iterate(trade_edges_undirected(spark, sf_dir), peel, 2)
     final_sup = support(g)
     return g.join(final_sup, ["a", "b"], "left").select(
         "a",

@@ -516,10 +516,7 @@ def stream_live_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finance_etl_spark.io.ticksource import TickDataSource
     from finance_etl_spark.streaming.runner import run_stream_to_memory
 
-    try:
-        spark.dataSource.register(TickDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(TickDataSource)
     raw = (
         spark.readStream.format("ticks")
         .option("batch_rows", 100)
@@ -790,10 +787,7 @@ def stream_live_cdc_to_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finance_etl_spark.io.ticksource import TickDataSource
     from finance_etl_spark.plans.tableformat import read_snapshot, versioned_replace
 
-    try:
-        spark.dataSource.register(TickDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(TickDataSource)
     root = tempfile.mkdtemp(prefix="cdc_snap_")
     state = {"version": 0}
 

@@ -860,10 +860,7 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
         read_manifest,
     )
 
-    try:
-        spark.dataSource.register(ManifestJsonlSink)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(ManifestJsonlSink)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )

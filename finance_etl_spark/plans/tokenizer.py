@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.operators.iterate import iterate, release
 from finance_etl_spark.plans.registry import register
 
 TOKEN_PATTERN = "[a-z0-9']+"
@@ -179,13 +180,10 @@ def train_bpe(vocab: DataFrame, n_merges: int = 8) -> list[tuple[str, str, int]]
     Tie-break is DETERMINISTIC: highest weighted count, then
     lexicographically smallest (left, right) — pinned so training is
     reproducible across partitionings and engines."""
-    spark = vocab.sparkSession
     chars = F.filter(F.split(F.col("word"), ""), lambda c: c != "")
-    state = vocab.select(
-        F.col("freq"), chars.alias("symbols")
-    ).localCheckpoint(eager=True)
     rules: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
+
+    def merge_best(state: DataFrame, _: int) -> DataFrame:
         best = (
             state.select("freq", F.explode(_adjacent_pairs(F.col("symbols"))).alias("p"))
             .groupBy("p.left", "p.right")
@@ -195,12 +193,15 @@ def train_bpe(vocab: DataFrame, n_merges: int = 8) -> list[tuple[str, str, int]]
             .collect()
         )
         if not best or best[0]["n"] is None:
-            break
+            return state
         left, right, n = best[0]["left"], best[0]["right"], int(best[0]["n"])
         rules.append((left, right, n))
-        state = state.select(
+        return state.select(
             "freq", _merge_pair(F.col("symbols"), left, right).alias("symbols")
-        ).localCheckpoint(eager=True)
+        )
+
+    init = vocab.select(F.col("freq"), chars.alias("symbols"))
+    release(iterate(init, merge_best, n_merges))
     return rules
 
 
@@ -226,17 +227,18 @@ def apply_bpe(
     """(word, freq, symbols): encode every word by replaying the merge
     rules IN TRAINING ORDER (the BPE encode contract — not best-match)
     over the distinct vocabulary. Each rule is one map-side fold over
-    |vocab| rows; lineage is checkpointed every few rules so the plan
+    |vocab| rows; lineage is checkpointed every 8 rules so the plan
     depth stays bounded at large rule counts."""
     chars = F.filter(F.split(F.col("word"), ""), lambda c: c != "")
-    state = vocab.select("word", "freq", chars.alias("symbols"))
-    for i, (left, right, _n) in enumerate(rules):
-        state = state.select(
+
+    def merge(state: DataFrame, i: int) -> DataFrame:
+        left, right, _n = rules[i]
+        return state.select(
             "word", "freq", _merge_pair(F.col("symbols"), left, right).alias("symbols")
         )
-        if (i + 1) % 4 == 0:
-            state = state.localCheckpoint(eager=True)
-    return state
+
+    init = vocab.select("word", "freq", chars.alias("symbols"))
+    return iterate(init, merge, len(rules), checkpoint_every=8)
 
 
 @register(

@@ -31,6 +31,7 @@ from finance_etl_spark.functions.money import (
 )
 from finance_etl_spark.functions.vectors import cosine, dot, l2_norm
 from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.operators.iterate import iterate
 from finance_etl_spark.plans.registry import register
 
 # DuckDB equivalents of functions.vectors (sequential fold).
@@ -653,7 +654,7 @@ def kmeans_centroids(e: DataFrame, k: int = N_CLUSTERS, iters: int = 3) -> DataF
     canonical iterative-algorithm shape on Spark. Per iteration: one
     linear assign scan (vectors x K, centroids broadcast) + one
     element-wise mean agg. Only the K-row centroid relation carries
-    state between iterations — it is materialized (persist + count)
+    state between iterations — operators/iterate.py checkpoints it
     each round so iteration N+1's lineage starts from K rows instead of
     re-running all prior rounds (lineage would otherwise grow
     exponentially). Deterministic seeds as in ivf_index. Since round
@@ -670,11 +671,8 @@ def kmeans_centroids(e: DataFrame, k: int = N_CLUSTERS, iters: int = 3) -> DataF
         .select("vec_id", F.col("embedding").alias("centroid"))
     )
     w = Window.orderBy("vec_id")  # K-row relation only
-    cents = seeds.select(
-        (F.row_number().over(w) - 1).alias("cluster_id"), "centroid"
-    ).persist()
-    cents.count()
-    for _ in range(iters):
+
+    def lloyd(cents: DataFrame, _: int) -> DataFrame:
         assigned = _assign_clusters(e, cents, n_keep=1).join(e, "vec_id")
         elems = assigned.select(
             "cluster_id", F.posexplode("embedding").alias("dim", "val")
@@ -691,16 +689,15 @@ def kmeans_centroids(e: DataFrame, k: int = N_CLUSTERS, iters: int = 3) -> DataF
                 / (F.count(F.lit(1)).cast("double") * F.lit(1e9))
             ).alias("m")
         )
-        prev = cents
-        cents = means.groupBy("cluster_id").agg(
+        return means.groupBy("cluster_id").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "m"))),
                 lambda s: s.getField("m"),
             ).alias("centroid")
-        ).persist()
-        cents.count()  # materialize THIS round before dropping the last
-        prev.unpersist()
-    return cents
+        )
+
+    init = seeds.select((F.row_number().over(w) - 1).alias("cluster_id"), "centroid")
+    return iterate(init, lloyd, iters)
 
 
 def _kmeans_iter_sql(i: int) -> str:
@@ -3129,24 +3126,20 @@ def vec_mmr_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     wpick = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "vec_id")
-    # Each greedy pick is localCheckpoint'd (3 rows — one per probe):
-    # round k's candidate set references every earlier pick TWICE
-    # (anti-membership + the max-sim join), so without lineage
-    # truncation the round-4 plan contains round-3's subplan twice,
-    # round-3 contains round-2's twice, ... — the same exponential
-    # logical-plan blowup the star-contraction rounds cap in
-    # curation.py, measured 11 s -> ~1 s exec at sf0.01 (values
-    # unchanged; checkpointing only materializes the 3-row picks).
-    s1 = (
-        pool.withColumn("score", F.col("relq"))
-        .withColumn("pk", F.row_number().over(wpick))
-        .filter(F.col("pk") == 1)
-        .select("query_id", "vec_id", "relq")
-        .localCheckpoint()
-    )
-    picks = [s1]
-    selected = s1.select("query_id", F.col("vec_id").alias("sel_vid"))
-    for _ in range(3):
+    # The state is the picks so far (3 rows per round, one per probe).
+    # Round k reads it TWICE (anti-membership + the max-sim join), so an
+    # uncut lineage doubles the plan per round; checkpointing each round
+    # measured 11 s -> ~1 s exec at sf0.01 (values unchanged).
+
+    def best(scored: DataFrame, pick: int) -> DataFrame:
+        return (
+            scored.withColumn("pk", F.row_number().over(wpick))
+            .filter(F.col("pk") == 1)
+            .select("query_id", F.lit(pick).cast("int").alias("pick"), "vec_id", "relq")
+        )
+
+    def step(picks: DataFrame, i: int) -> DataFrame:
+        selected = picks.select("query_id", F.col("vec_id").alias("sel_vid"))
         cand = (
             pool.join(selected, ["query_id"], "inner")
             .filter(F.col("vec_id") != F.col("sel_vid"))
@@ -3174,20 +3167,7 @@ def vec_mmr_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("simq").alias("max_sim"))
             .withColumn("score", 7 * F.col("relq") - 3 * F.col("max_sim"))
         )
-        pick = (
-            scored.withColumn("pk", F.row_number().over(wpick))
-            .filter(F.col("pk") == 1)
-            .select("query_id", "vec_id", "relq")
-            .localCheckpoint()
-        )
-        picks.append(pick)
-        selected = selected.unionAll(
-            pick.select("query_id", F.col("vec_id").alias("sel_vid"))
-        )
-    out = None
-    for i, p_ in enumerate(picks, start=1):
-        row = p_.select(
-            "query_id", F.lit(i).cast("int").alias("pick"), "vec_id", "relq"
-        )
-        out = row if out is None else out.unionAll(row)
-    return out.orderBy("query_id", "pick")
+        return picks.unionAll(best(scored, i + 2))
+
+    first = best(pool.withColumn("score", F.col("relq")), 1)
+    return iterate(first, step, 3).orderBy("query_id", "pick")

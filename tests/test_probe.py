@@ -36,7 +36,7 @@ def run(sf_dir):
 
 
 def test_time_reports_build_sink_split_and_jobs(run):
-    code, [rec] = run("time", "q1_pricing_summary")
+    code, [rec, loop] = run("time", "q1_pricing_summary", "graph_kcore_peel")
     assert code == 0
     assert rec["query"] == "q1_pricing_summary"
     assert rec["build_s"] > 0 and rec["sink_s"] > 0
@@ -44,7 +44,12 @@ def test_time_reports_build_sink_split_and_jobs(run):
     assert rec["eager_jobs"] >= 0 and rec["sink_jobs"] >= 1
     assert rec["stages"] >= rec["sink_jobs"]
     assert rec["cached_bytes_left"] == 0
+    assert rec["rdds_left_after_clear"] == rec["bytes_left_after_clear"] == 0
     assert len(rec["runs_total_s"]) == 1
+    # an iterative query keeps only its final checkpointed state, which
+    # clearCache() does not drop
+    assert loop["query"] == "graph_kcore_peel"
+    assert loop["rdds_left_after_clear"] == 1 and loop["bytes_left_after_clear"] > 0
 
 
 def test_ab_same_rows_exits_zero(run):

@@ -387,3 +387,26 @@ def test_column_recipes_defined_only_in_recipe_homes():
                 ]
     assert not bad
     assert money.DEC == "decimal(30,10)"
+
+
+def test_loops_materialize_only_through_iterate():
+    """Every iterative operator runs its rounds through
+    operators/iterate.py, which checkpoints, tests convergence and
+    releases superseded rounds; no other for/while body materializes."""
+    calls = {"localCheckpoint", "persist", "cache"}
+    bad = set()
+    for p in sorted(PKG.rglob("*.py")):
+        if p == PKG / "operators" / "iterate.py":
+            continue
+        for loop in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            bad |= {
+                f"{p.relative_to(PKG)}:{n.lineno} .{n.func.attr}("
+                for stmt in loop.body + loop.orelse
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in calls
+            }
+    assert not bad, sorted(bad)

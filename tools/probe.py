@@ -17,7 +17,9 @@ time   Warms each query once, then runs it N times (default 3): build (the
        query left cached and clearing the cache after every run. Reports the
        best run (least build+sink): build/sink seconds, eager vs sink jobs,
        stages, tasks, executor run/CPU/GC time, input, shuffle and spill
-       bytes, cached bytes left, and every run's total.
+       bytes, cached bytes left before ``clearCache()``, the persistent
+       RDDs (count and bytes) the run still left after it, and every
+       run's total.
 
 ab     Warms both arms and keeps their rows, then runs N reps (default 6),
        alternating which arm goes first. Before each rep it waits, up to
@@ -120,11 +122,21 @@ def tracer(spark) -> Tracer:
     return Tracer(spark, enabled=True)
 
 
+def persistent_rdds(spark) -> dict[int, int]:
+    """Storage bytes (memory + disk) of each RDD still registered as
+    persistent, by id: ``clearCache()`` drops DataFrame caches but not
+    localCheckpoint blocks."""
+    jsc = spark.sparkContext._jsc
+    size = {i.id(): i.memSize() + i.diskSize() for i in jsc.sc().getRDDStorageInfo()}
+    return {int(k): size.get(int(k), 0) for k in jsc.getPersistentRDDs().keySet()}
+
+
 def run_once(spark, name: str, build, sf_dir: str) -> dict:
     """Build and noop-sink one query under two spans, then clear the cache
     it left behind."""
     tr = tracer(spark)
     cached_before = tr.cached_bytes()
+    rdds_before = persistent_rdds(spark)
     with tr.span("build", op=name) as b:
         df = build(spark, sf_dir)
     with tr.span("sink", op=name) as s:
@@ -140,6 +152,9 @@ def run_once(spark, name: str, build, sf_dir: str) -> dict:
         "cached_bytes_left": tr.cached_bytes() - cached_before,
     }
     spark.catalog.clearCache()
+    left = {k: v for k, v in persistent_rdds(spark).items() if k not in rdds_before}
+    rec["rdds_left_after_clear"] = len(left)
+    rec["bytes_left_after_clear"] = sum(left.values())
     return {
         k: int(v) if k.endswith("_bytes") else round(v, 3) if isinstance(v, float) else v
         for k, v in rec.items()
