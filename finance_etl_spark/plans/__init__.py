@@ -40,25 +40,18 @@ from finance_etl_spark.plans import (  # noqa: F401
     stats,
     streaming_queries,
     ml,
-    round11,
-    round12,
-    round13,
-    round14,
-    round15,
 )
 
-# ROUND-16 WINDOW: the 32 hash-oracled queries no driver window has
-# sampled yet — 14 round-14 additions, then the 18 round-15 additions.
+# DRIVER WINDOW: the 32 hash-oracled queries no driver window has
+# sampled yet, oldest first.
 front_queries(
     [
-        # round-14 additions
         "text_simpson_diversity", "text_burstiness", "ml_cluster_ari",
         "ml_cluster_nmi", "dq_functional_dependency",
         "stat_cramers_v_corrected", "stat_hypergeom_surprise",
         "stat_cvm_uniform", "stat_ad_uniform", "ts_periodogram",
         "graph_transitivity_global", "text_boilerplate_ngrams",
         "dq_monotonicity_audit", "fin_cagr_log",
-        # round-15 additions
         "stat_moods_median", "stat_bartels_rank_vn", "ts_cox_stuart",
         "fin_gain_to_pain", "fin_jensen_alpha", "fin_martin_ratio",
         "text_smog_index", "text_ari_index", "text_pmi_bigrams",

@@ -21,7 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import DEC, as_d, dsum, o_dsum
+from finance_etl_spark.functions.money import (
+    DEC,
+    as_d,
+    dsum,
+    o_dsum,
+    o_ordered_fold_sum,
+    ordered_fold_sum,
+)
 from finance_etl_spark.io.readers import load_table
 from finance_etl_spark.operators.joins import asof_join
 from finance_etl_spark.plans.recipes import (
@@ -3491,4 +3498,2358 @@ def fin_var_exception_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("exceptions").cast("double") - n_d * p)
             / F.sqrt(n_d * p * (1 - p)),
         ).alias("binom_z"),
+    ).orderBy("segment")
+
+
+@register(
+    "fin_bond_convexity_grid",
+    tags=("finance", "closed-form"),
+    oracle="""
+        WITH y AS (
+            SELECT n_nationkey,
+                   CAST(0.01 AS DOUBLE)
+                     + CAST(n_nationkey % 10 AS DOUBLE) * CAST(0.005 AS DOUBLE)
+                       AS yld
+            FROM nation
+        ),
+        grid AS (
+            SELECT n_nationkey, yld, c.cpn, m.mat
+            FROM y
+            CROSS JOIN (SELECT unnest([CAST(0.02 AS DOUBLE),
+                                       CAST(0.04 AS DOUBLE),
+                                       CAST(0.06 AS DOUBLE)]) AS cpn) c
+            CROSS JOIN (SELECT unnest([2, 5, 10, 30]) AS mat) m
+        ),
+        priced AS (
+            SELECT n_nationkey, cpn, mat, yld,
+                   list_reduce(
+                       list_transform(range(1, mat + 1), t ->
+                           (CASE WHEN t = mat THEN 1 + cpn ELSE cpn END)
+                             * pow(1 + yld, -CAST(t AS DOUBLE))),
+                       (a, x) -> a + x) AS price,
+                   list_reduce(
+                       list_transform(range(1, mat + 1), t ->
+                           CAST(t AS DOUBLE) * (t + 1)
+                             * (CASE WHEN t = mat THEN 1 + cpn ELSE cpn END)
+                             * pow(1 + yld, -CAST(t + 2 AS DOUBLE))),
+                       (a, x) -> a + x) AS cx_num
+            FROM grid
+        )
+        SELECT n_nationkey, cpn, mat, yld,
+               CAST(FLOOR(price * 1e8) AS BIGINT) AS price_q8,
+               CAST(FLOOR(cx_num / price * 1e6) AS BIGINT) AS convexity_q6
+        FROM priced
+        ORDER BY n_nationkey, cpn, mat
+    """,
+)
+def fin_bond_convexity_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bond CONVEXITY over the same (nation-yield x coupon x maturity)
+    grid as fin_bond_duration_grid — the second-order rate sensitivity
+    risk desks pair with duration: Cx = sum_t t(t+1) CF_t (1+y)^-(t+2)
+    / P. The cash-flow sum folds a sequence(1..mat) IN ORDER on both
+    engines (<= 30 terms per grid row, model-sized fan-out of 300
+    rows), so the double accumulation order is pinned; price and
+    convexity floor-quantize at 1e8/1e6 per the transcendental-output
+    recipe (pow is libm territory — quantization makes the comparison
+    engine-exact, same as the sibling grid). Zero corpus involvement
+    beyond the 25-row nation spine."""
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey")
+    y = n.select(
+        "n_nationkey",
+        (
+            F.lit(0.01).cast("double")
+            + (F.col("n_nationkey") % 10).cast("double")
+            * F.lit(0.005).cast("double")
+        ).alias("yld"),
+    )
+    cpn = spark.createDataFrame([(0.02,), (0.04,), (0.06,)], "cpn double")
+    mat = spark.createDataFrame([(2,), (5,), (10,), (30,)], "mat int")
+    grid = y.crossJoin(F.broadcast(cpn)).crossJoin(F.broadcast(mat))
+
+    def _cf(t):
+        return F.when(t == F.col("mat"), 1 + F.col("cpn")).otherwise(
+            F.col("cpn")
+        )
+
+    seq = F.sequence(F.lit(1), F.col("mat"))
+    price = F.aggregate(
+        seq,
+        F.lit(0.0),
+        lambda a, t: a
+        + _cf(t) * F.pow(1 + F.col("yld"), -t.cast("double")),
+    )
+    cx_num = F.aggregate(
+        seq,
+        F.lit(0.0),
+        lambda a, t: a
+        + t.cast("double")
+        * (t + 1)
+        * _cf(t)
+        * F.pow(1 + F.col("yld"), -(t + 2).cast("double")),
+    )
+    return (
+        grid.select(
+            "n_nationkey",
+            "cpn",
+            "mat",
+            "yld",
+            F.floor(price * F.lit(1e8)).cast("bigint").alias("price_q8"),
+            F.floor(cx_num / price * F.lit(1e6))
+            .cast("bigint")
+            .alias("convexity_q6"),
+        )
+        .orderBy("n_nationkey", "cpn", "mat")
+    )
+
+
+@register(
+    "fin_twr_linked_returns",
+    tags=("finance", "window"),
+    oracle="""
+        WITH monthly AS (
+            SELECT c.c_mktsegment AS segment,
+                   CAST(strftime(o.o_orderdate, '%Y-%m') AS VARCHAR) AS ym,
+                   CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
+                        AS DECIMAL(18,2)) AS x
+            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+            GROUP BY 1, 2
+        ),
+        ret AS (
+            SELECT segment, ym,
+                   CAST(CAST(x AS VARCHAR) AS DOUBLE)
+                     / CAST(CAST(xp AS VARCHAR) AS DOUBLE) AS lnk
+            FROM (SELECT segment, ym, x,
+                         LAG(x) OVER (PARTITION BY segment ORDER BY ym) AS xp
+                  FROM monthly)
+            WHERE xp IS NOT NULL
+        )
+        SELECT segment,
+               CAST(COUNT(*) AS BIGINT) AS n_months,
+               list_reduce(list(lnk ORDER BY ym), (a, x) -> a * x) - 1
+                   AS twr,
+               CAST(FLOOR((pow(list_reduce(list(lnk ORDER BY ym),
+                                           (a, x) -> a * x),
+                               12.0 / COUNT(*)) - 1) * 1e8) AS BIGINT)
+                   AS twr_annualized_q8
+        FROM ret
+        GROUP BY segment
+        ORDER BY segment
+    """,
+)
+def fin_twr_linked_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-weighted return per segment: geometric linking of monthly
+    revenue growth factors, TWR = prod_m (x_m / x_{m-1}) - 1 — the
+    GIPS-mandated performance number that strips flow timing out of
+    the return. Monthly factors are exact-decimal ratios converted to
+    double once (VARCHAR route); the product folds IN MONTH ORDER on
+    both engines (array_sort fold == list(... ORDER BY) reduce) so the
+    float multiplication order is pinned — a plain PRODUCT aggregate
+    would be partition-order-dependent. The annualization needs pow
+    (libm), so it ships floor-quantized at 1e8 per the transcendental
+    recipe; the raw TWR is libm-free and exact-comparable. Calendar-
+    bounded months per segment; corpus work is one hash agg."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    monthly = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_mktsegment").alias("segment"),
+            F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
+        )
+        .agg(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("decimal(18,2)")
+            .alias("x")
+        )
+    )
+    w = Window.partitionBy("segment").orderBy("ym")
+    ret = (
+        monthly.withColumn("xp", F.lag("x").over(w))
+        .filter(F.col("xp").isNotNull())
+        .select(
+            "segment", "ym", (as_d(F.col("x")) / as_d(F.col("xp"))).alias("lnk")
+        )
+    )
+    prod = F.aggregate(
+        F.array_sort(
+            F.collect_list(F.struct(F.col("ym").alias("o"), F.col("lnk").alias("t")))
+        ),
+        F.lit(1.0),
+        lambda a, s: a * s["t"],
+    )
+    return (
+        ret.groupBy("segment")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_months"),
+            prod.alias("prod_raw"),
+        )
+        .select(
+            "segment",
+            "n_months",
+            (F.col("prod_raw") - 1).alias("twr"),
+            F.floor(
+                (
+                    F.pow(
+                        F.col("prod_raw"),
+                        F.lit(12.0) / F.col("n_months").cast("double"),
+                    )
+                    - 1
+                )
+                * F.lit(1e8)
+            )
+            .cast("bigint")
+            .alias("twr_annualized_q8"),
+        )
+        .orderBy("segment")
+    )
+
+
+@register(
+    "fin_rachev_ratio",
+    tags=("finance", "window", "risk"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        ret AS (
+            SELECT segment, d,
+                   {o_ret_q9('x', 'xp')} AS r
+            FROM (SELECT segment, d, x,
+                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
+                  FROM daily)
+            WHERE xp IS NOT NULL
+        ),
+        ranked AS (
+            SELECT segment, r,
+                   ROW_NUMBER() OVER (PARTITION BY segment
+                                      ORDER BY r DESC, d) AS rk_hi,
+                   ROW_NUMBER() OVER (PARTITION BY segment
+                                      ORDER BY r, d) AS rk_lo,
+                   COUNT(*) OVER (PARTITION BY segment) AS n
+            FROM ret
+        ),
+        tails AS (
+            SELECT segment,
+                   CAST(MIN(n) AS BIGINT) AS n,
+                   CAST((MIN(n) + 19) // 20 AS BIGINT) AS q,
+                   CAST(SUM(CASE WHEN rk_hi <= (n + 19) // 20
+                                 THEN r ELSE 0 END) AS BIGINT) AS top_sum,
+                   CAST(SUM(CASE WHEN rk_lo <= (n + 19) // 20
+                                 THEN r ELSE 0 END) AS BIGINT) AS bot_sum
+            FROM ranked GROUP BY segment
+        )
+        SELECT segment, n, q,
+               CAST(top_sum AS DOUBLE) / q / 1e9 AS etg,
+               CAST(-bot_sum AS DOUBLE) / q / 1e9 AS etl,
+               CASE WHEN bot_sum < 0 THEN
+                 CAST(top_sum AS DOUBLE) / CAST(-bot_sum AS DOUBLE)
+               END AS rachev
+        FROM tails
+        ORDER BY segment
+    """,
+)
+def fin_rachev_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rachev ratio per segment at 5%/5%: expected tail GAIN over
+    expected tail LOSS — the reward-to-risk number that compares the
+    best 5% of days against the worst 5% instead of mean/variance
+    (Rachev et al. 2004). Daily returns quantize to exact 1e-9
+    integers (the VaR-family recipe) so both tails are exact integer
+    sums of the top/bottom ceil(n/20) order statistics — ranks from
+    per-segment windows over calendar-bounded rows, tail size in
+    exact integer arithmetic ((n+19) div 20, never a double rank).
+    The ratio NULLs when the lower tail sums to a non-negative value
+    (no losses — degenerate, documented); tail means are presented in
+    return units. Same deterministic (r, d) tiebreak as
+    fin_var_exception_backtest."""
+    daily = seg_daily(spark, sf_dir)
+    ret = seg_returns(daily)
+    w_hi = Window.partitionBy("segment").orderBy(F.col("r").desc(), "d")
+    w_lo = Window.partitionBy("segment").orderBy("r", "d")
+    w_n = Window.partitionBy("segment")
+    ranked = ret.select(
+        "segment",
+        "r",
+        F.row_number().over(w_hi).alias("rk_hi"),
+        F.row_number().over(w_lo).alias("rk_lo"),
+        F.count(F.lit(1)).over(w_n).alias("n"),
+    )
+    qexpr = F.expr("CAST((n + 19) DIV 20 AS BIGINT)")
+    tails = ranked.groupBy("segment").agg(
+        F.min("n").cast("bigint").alias("n"),
+        F.min(F.expr("CAST((n + 19) DIV 20 AS BIGINT)")).alias("q"),
+        F.sum(F.when(F.col("rk_hi") <= qexpr, F.col("r")).otherwise(0))
+        .cast("bigint")
+        .alias("top_sum"),
+        F.sum(F.when(F.col("rk_lo") <= qexpr, F.col("r")).otherwise(0))
+        .cast("bigint")
+        .alias("bot_sum"),
+    )
+    return tails.select(
+        "segment",
+        "n",
+        "q",
+        (F.col("top_sum").cast("double") / F.col("q") / F.lit(1e9)).alias(
+            "etg"
+        ),
+        ((-F.col("bot_sum")).cast("double") / F.col("q") / F.lit(1e9)).alias(
+            "etl"
+        ),
+        F.when(
+            F.col("bot_sum") < 0,
+            F.col("top_sum").cast("double") / (-F.col("bot_sum")).cast("double"),
+        ).alias("rachev"),
+    ).orderBy("segment")
+
+
+@register(
+    "fin_risk_parity_weights",
+    tags=("finance", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        ret AS (
+            SELECT segment,
+                   {o_ret_q9('x', 'xp')} AS r
+            FROM (SELECT segment, d, x,
+                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
+                  FROM daily)
+            WHERE xp IS NOT NULL
+        ),
+        vol AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   sqrt((CAST(CAST(SUM(CAST(r AS DECIMAL(38,0)) * r)
+                              AS VARCHAR) AS DOUBLE)
+                         - CAST(CAST(SUM(CAST(r AS DECIMAL(38,0)))
+                                AS VARCHAR) AS DOUBLE)
+                           * CAST(CAST(SUM(CAST(r AS DECIMAL(38,0)))
+                                  AS VARCHAR) AS DOUBLE) / COUNT(*))
+                        / (COUNT(*) - 1)) / 1e9 AS sigma
+            FROM ret GROUP BY segment
+        ),
+        inv AS (
+            SELECT segment, n, sigma, 1.0 / sigma AS iv FROM vol
+        ),
+        tot AS (
+            SELECT {o_ordered_fold_sum('segment', 'iv')}
+                       AS iv_sum
+            FROM inv
+        )
+        SELECT inv.segment, inv.n, inv.sigma,
+               inv.iv / tot.iv_sum AS weight
+        FROM inv CROSS JOIN tot
+        ORDER BY inv.segment
+    """,
+)
+def fin_risk_parity_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Naive risk-parity (inverse-volatility) portfolio weights across
+    the five market segments: w_i = (1/sigma_i) / sum_j (1/sigma_j) —
+    the equal-risk-contribution first approximation every allocation
+    desk starts from. Daily-return volatility comes from exact
+    DECIMAL(38,0) sums of the 1e-9-quantized returns (sum r, sum r^2,
+    VARCHAR-routed to double at the edge; sample variance with n-1);
+    the inverse-vol normalizer folds the five terms in PINNED segment
+    order. sigma > 0 is guaranteed by the fixture's daily revenue
+    variation at every SF (a zero-variance segment would make iv
+    infinite — the weight column would propagate inf identically on
+    both engines rather than silently diverging). One corpus hash agg;
+    everything after is a 5-row relation."""
+    daily = seg_daily(spark, sf_dir)
+    w = Window.partitionBy("segment").orderBy("d")
+    ret = (
+        daily.withColumn("xp", F.lag("x").over(w))
+        .filter(F.col("xp").isNotNull())
+        .select(
+            "segment",
+            ret_q9(F.col("x"), F.col("xp")).alias("r"),
+        )
+    )
+    vol = ret.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        (
+            F.sqrt(
+                (
+                    as_d(
+                        F.sum(F.col("r").cast("decimal(38,0)") * F.col("r"))
+                    )
+                    - as_d(F.sum(F.col("r").cast("decimal(38,0)")))
+                    * as_d(F.sum(F.col("r").cast("decimal(38,0)")))
+                    / F.count(F.lit(1))
+                )
+                / (F.count(F.lit(1)) - 1)
+            )
+            / F.lit(1e9)
+        ).alias("sigma"),
+    )
+    inv = vol.select(
+        "segment", "n", "sigma", (F.lit(1.0) / F.col("sigma")).alias("iv")
+    )
+    tot = inv.agg(
+        ordered_fold_sum(F.col("segment"), F.col("iv")).alias("iv_sum")
+    )
+    return (
+        inv.crossJoin(F.broadcast(tot))
+        .select(
+            "segment",
+            "n",
+            "sigma",
+            (F.col("iv") / F.col("iv_sum")).alias("weight"),
+        )
+        .orderBy("segment")
+    )
+
+
+@register(
+    "fin_drawdown_duration",
+    tags=("finance", "window", "risk"),
+    oracle=f"""
+        WITH daily AS ({SEG_PNL_DAILY_SQL}),
+        eq AS (
+            SELECT segment, d,
+                   CAST(SUM(pnl_cents) OVER w AS BIGINT) AS equity,
+                   ROW_NUMBER() OVER (PARTITION BY segment ORDER BY d) AS rn
+            FROM daily
+            WINDOW w AS (PARTITION BY segment ORDER BY d
+                         ROWS UNBOUNDED PRECEDING)
+        ),
+        dd AS (
+            SELECT segment, d, rn, equity,
+                   CAST(MAX(equity) OVER (PARTITION BY segment ORDER BY rn
+                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS peak
+            FROM eq
+        ),
+        flagged AS (
+            SELECT segment, rn,
+                   CASE WHEN equity < peak THEN 1 ELSE 0 END AS under
+            FROM dd
+        ),
+        islands AS (
+            SELECT segment, rn, under,
+                   rn - CAST(SUM(under) OVER (PARTITION BY segment ORDER BY rn
+                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS grp_key
+            FROM flagged
+        ),
+        spells AS (
+            SELECT segment, CAST(COUNT(*) AS BIGINT) AS len,
+                   CAST(MIN(rn) AS BIGINT) AS start_rn
+            FROM islands WHERE under = 1
+            GROUP BY segment, grp_key
+        ),
+        best AS (
+            SELECT segment, len, start_rn,
+                   ROW_NUMBER() OVER (PARTITION BY segment
+                       ORDER BY len DESC, start_rn) AS pk
+            FROM spells
+        ),
+        agg AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n_spells,
+                   CAST(SUM(len) AS BIGINT) AS days_underwater
+            FROM spells GROUP BY segment
+        )
+        SELECT agg.segment, agg.n_spells, agg.days_underwater,
+               best.len AS longest_spell_days,
+               best.start_rn AS longest_spell_start_rn
+        FROM agg JOIN best ON best.segment = agg.segment AND best.pk = 1
+        ORDER BY agg.segment
+    """,
+)
+def fin_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drawdown DURATION per segment — the time dimension
+    fin_max_drawdown's depth number misses: how many trading days the
+    equity curve spends below its running peak, how many distinct
+    underwater spells there are, and the length/start of the longest
+    one (the lost-decade diagnostic; two portfolios with equal max
+    drawdown differ enormously in recovery time). Equity and running
+    peak are the same exact-cents stacked windows as fin_max_drawdown;
+    spells are gaps-and-islands on the below-peak flag (rn - running
+    count of flags keys each island, a pure window identity — no
+    iterative state), with the deterministic longest-spell tiebreak on
+    earliest start. All windows per-segment over calendar-bounded
+    rows; every output is an exact integer."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    daily = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_mktsegment").alias("segment"),
+            F.col("o_orderdate").cast("date").alias("d"),
+        )
+        .agg(
+            F.sum(
+                F.when(F.col("o_orderstatus") == "F", 1)
+                .otherwise(-1)
+                * (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast(
+                    "bigint"
+                )
+            )
+            .cast("bigint")
+            .alias("pnl_cents")
+        )
+    )
+    w_eq = Window.partitionBy("segment").orderBy("d").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    w_rn = Window.partitionBy("segment").orderBy("d")
+    eq = daily.select(
+        "segment",
+        "d",
+        F.sum("pnl_cents").over(w_eq).cast("bigint").alias("equity"),
+        F.row_number().over(w_rn).alias("rn"),
+    )
+    w_pk = Window.partitionBy("segment").orderBy("rn").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    dd = eq.select(
+        "segment",
+        "rn",
+        (F.col("equity") < F.max("equity").over(w_pk).cast("bigint"))
+        .cast("int")
+        .alias("under"),
+    )
+    w_cum = Window.partitionBy("segment").orderBy("rn").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    islands = dd.select(
+        "segment",
+        "rn",
+        "under",
+        (F.col("rn") - F.sum("under").over(w_cum).cast("bigint")).alias(
+            "grp_key"
+        ),
+    )
+    spells = (
+        islands.filter(F.col("under") == 1)
+        .groupBy("segment", "grp_key")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("len"),
+            F.min("rn").cast("bigint").alias("start_rn"),
+        )
+    )
+    w_best = Window.partitionBy("segment").orderBy(
+        F.col("len").desc(), "start_rn"
+    )
+    best = (
+        spells.withColumn("pk", F.row_number().over(w_best))
+        .filter(F.col("pk") == 1)
+        .select(
+            "segment",
+            F.col("len").alias("longest_spell_days"),
+            F.col("start_rn").alias("longest_spell_start_rn"),
+        )
+    )
+    agg = spells.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_spells"),
+        F.sum("len").cast("bigint").alias("days_underwater"),
+    )
+    return (
+        agg.join(best, "segment")
+        .select(
+            "segment",
+            "n_spells",
+            "days_underwater",
+            "longest_spell_days",
+            "longest_spell_start_rn",
+        )
+        .orderBy("segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_pain_index — mean drawdown + underwater fraction per segment
+
+
+@register(
+    "fin_pain_index",
+    tags=("finance", "window", "risk"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        dd AS (
+            SELECT segment,
+                   {o_dd_q6('mx', 'x')} AS ddq
+            FROM (
+                SELECT segment, x,
+                       MAX(x) OVER (PARTITION BY segment ORDER BY d
+                                    ROWS UNBOUNDED PRECEDING) AS mx
+                FROM daily
+            )
+        )
+        SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_days,
+               CAST(SUM(ddq) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) / 1e6
+                   AS pain_index_pct,
+               CAST(SUM(CASE WHEN ddq > 0 THEN 1 ELSE 0 END) AS DOUBLE)
+                 / CAST(COUNT(*) AS DOUBLE) AS underwater_frac,
+               CAST(MAX(ddq) AS DOUBLE) / 1e6 AS max_dd_pct
+        FROM dd GROUP BY segment ORDER BY segment
+    """,
+)
+def fin_pain_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pain index per market segment: the MEAN percentage drawdown
+    from the running revenue peak (vs fin_ulcer_index's RMS and
+    fin_max_drawdown's single trough — the pain index weights long
+    shallow slumps linearly, the metric behind the pain ratio in
+    fund reporting), plus the underwater fraction (share of days
+    below the prior peak). Same q6 floor-quantized drawdown BIGINTs
+    as the ulcer recipe, so the mean is an exact integer sum with one
+    double division at the edge and the underwater count is pure
+    integer. Per-segment windows over calendar-bounded rows; corpus
+    work is the one daily agg."""
+    daily = seg_daily(spark, sf_dir)
+    w = Window.partitionBy("segment").orderBy("d").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    mx = F.max("x").over(w)
+    dd = daily.select(
+        "segment",
+        dd_q6(mx, F.col("x"))
+        .alias("ddq"),
+    )
+    n_d = F.count(F.lit(1)).cast("double")
+    return (
+        dd.groupBy("segment")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_days"),
+            (F.sum("ddq").cast("double") / n_d / F.lit(1e6)).alias(
+                "pain_index_pct"
+            ),
+            (
+                F.sum(F.when(F.col("ddq") > 0, 1).otherwise(0)).cast("double")
+                / n_d
+            ).alias("underwater_frac"),
+            (F.max("ddq").cast("double") / F.lit(1e6)).alias("max_dd_pct"),
+        )
+        .orderBy("segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_treynor_ratio — mean return per unit of market beta
+
+
+@register(
+    "fin_treynor_ratio",
+    tags=("finance", "window", "stats"),
+    oracle=f"""
+        WITH {MARKET_MODEL_SQL}
+        SELECT segment, n,
+               CASE WHEN CAST(n AS DOUBLE) * smm
+                         - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) > 0
+                     AND CAST(n AS DOUBLE) * srm
+                         - CAST(sr AS DOUBLE) * CAST(sm AS DOUBLE) <> 0 THEN
+                 (CAST(sr AS DOUBLE) / CAST(n AS DOUBLE) / 1e9)
+                 / ((CAST(n AS DOUBLE) * srm
+                     - CAST(sr AS DOUBLE) * CAST(sm AS DOUBLE))
+                    / (CAST(n AS DOUBLE) * smm
+                       - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE)))
+               END AS treynor_daily
+        FROM s ORDER BY segment
+    """,
+)
+def fin_treynor_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Treynor ratio per segment: mean daily return per unit of CAPM
+    market beta — reward per unit of SYSTEMATIC (not total) risk, the
+    companion to fin_sharpe_sortino that uses fin_capm_beta's exact
+    sufficient statistics (five integer/DECIMAL sums off the shared q9
+    return quantization; risk-free pinned at 0, documented). The ratio
+    assembles in ONE guarded double expression — zero market variance
+    or exactly-zero beta NULLs it identically on both engines (the
+    beta-zero guard compares the covariance numerator, which is exact
+    before the one double division). Corpus work: one broadcast-join
+    daily agg; everything after is calendar-bounded."""
+    daily = seg_daily(spark, sf_dir).persist()
+    s = market_model_sums(daily)
+    n_d = F.col("n").cast("double")
+    sr_d = F.col("sr").cast("double")
+    sm_d = F.col("sm").cast("double")
+    cov_num = n_d * F.col("srm") - sr_d * sm_d
+    var_m = n_d * F.col("smm") - sm_d * sm_d
+    return s.select(
+        "segment",
+        "n",
+        F.when(
+            (var_m > 0) & (cov_num != 0),
+            (sr_d / n_d / F.lit(1e9)) / (cov_num / var_m),
+        ).alias("treynor_daily"),
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# fin_active_share — yearly segment-mix drift vs the whole-period book
+
+
+@register(
+    "fin_active_share",
+    tags=("finance", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        ys AS (
+            SELECT EXTRACT(year FROM d) AS y, segment,
+                   CAST(SUM(x) AS DECIMAL(18,2)) AS xs
+            FROM daily GROUP BY 1, 2
+        ),
+        yt AS (
+            SELECT y, CAST(SUM(xs) AS DECIMAL(18,2)) AS xy
+            FROM ys GROUP BY y
+        ),
+        bs AS (
+            SELECT segment, CAST(SUM(xs) AS DECIMAL(18,2)) AS xb
+            FROM ys GROUP BY segment
+        ),
+        bt AS (SELECT CAST(SUM(xb) AS DECIMAL(18,2)) AS xt FROM bs),
+        terms AS (
+            SELECT yt.y, yt.xy, bt.xt, ys.xs,
+                   ABS(CAST(COALESCE(ys.xs, 0) AS DECIMAL(19,2))
+                         * CAST(bt.xt AS DECIMAL(19,2))
+                       - CAST(bs.xb AS DECIMAL(19,2))
+                         * CAST(yt.xy AS DECIMAL(19,2))) AS num
+            FROM yt
+            CROSS JOIN bs
+            CROSS JOIN bt
+            LEFT JOIN ys ON ys.y = yt.y AND ys.segment = bs.segment
+        )
+        SELECT CAST(y AS BIGINT) AS year,
+               CAST(COUNT(xs) AS BIGINT) AS n_segments,
+               CAST(CAST(SUM(num) AS VARCHAR) AS DOUBLE)
+                 / (CAST(2 AS DOUBLE)
+                    * CAST(CAST(xy AS VARCHAR) AS DOUBLE)
+                    * CAST(CAST(xt AS VARCHAR) AS DOUBLE)) AS active_share
+        FROM terms GROUP BY y, xy, xt ORDER BY year
+    """,
+)
+def fin_active_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Active share of each YEAR's segment revenue mix against the
+    whole-period benchmark mix: AS_y = 1/2 * sum_s |w_{y,s} - w_s| —
+    the standard portfolio-drift number (Cremers & Petajisto 2009),
+    here reading 'how differently did this year's book allocate across
+    market segments'. The sum runs over the FULL year x benchmark-
+    segment grid (yt x bs, left-joined against the year's observed
+    segments): a benchmark segment with zero revenue in year y
+    contributes its |0 - w_s| term rather than silently dropping out
+    (round-11 advisor finding — the present-segments-only join
+    understated drift whenever a segment went dark for a year).
+    n_segments counts the segments PRESENT in the year (COUNT over the
+    nullable xs), so the column still reports observed breadth. The
+    weight difference is cleared to a COMMON
+    EXACT DENOMINATOR before any float: |x_ys * X - x_s * X_y| is a
+    DECIMAL(38,4) product difference, summed exactly over the
+    5-segment grid, with ONE double division by (2 * X_y * X) at the
+    presentation edge — so no float sum ever runs over the segment
+    axis. Class-5 divisor: a year row exists only because orders with
+    strictly positive o_totalprice landed in it, so X_y and X are
+    bounded below by the first order's price — documented, not
+    guarded, identically on both engines. Scale: corpus work is the shared daily agg; the year x
+    segment grid is a <= 7x5 broadcast relation. (Decimal headroom: the
+    19,2 x 19,2 product is exact DECIMAL(38,4) to ~1e16 period
+    revenue — beyond sf1000; documented, not guarded.)"""
+    daily = seg_daily(spark, sf_dir)
+    ys = daily.groupBy(
+        F.year("d").alias("y"), "segment"
+    ).agg(F.sum("x").cast("decimal(18,2)").alias("xs"))
+    ys = ys.persist()  # grid-sized; feeds all three rollups
+    yt = ys.groupBy("y").agg(F.sum("xs").cast("decimal(18,2)").alias("xy"))
+    bs = ys.groupBy("segment").agg(
+        F.sum("xs").cast("decimal(18,2)").alias("xb")
+    )
+    bt = bs.agg(F.sum("xb").cast("decimal(18,2)").alias("xt"))
+    terms = (
+        yt.crossJoin(F.broadcast(bs))
+        .crossJoin(F.broadcast(bt))
+        .join(F.broadcast(ys), ["y", "segment"], "left")
+        .select(
+            "y",
+            "xy",
+            "xt",
+            "xs",
+            F.abs(
+                F.coalesce(F.col("xs"), F.lit(0).cast("decimal(18,2)"))
+                .cast("decimal(19,2)")
+                * F.col("xt").cast("decimal(19,2)")
+                - F.col("xb").cast("decimal(19,2)")
+                * F.col("xy").cast("decimal(19,2)")
+            ).alias("num"),
+        )
+    )
+    return (
+        terms.groupBy("y", "xy", "xt")
+        .agg(
+            F.count("xs").cast("bigint").alias("n_segments"),
+            (
+                as_d(F.sum("num"))
+                / (F.lit(2.0) * as_d(F.col("xy")) * as_d(F.col("xt")))
+            ).alias("active_share"),
+        )
+        .select(
+            F.col("y").cast("bigint").alias("year"),
+            "n_segments",
+            "active_share",
+        )
+        .orderBy("year")
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_capture_ratios — up/down-market capture per segment
+
+
+@register(
+    "fin_capture_ratios",
+    tags=("finance", "window", "stats"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
+        j AS (SELECT rs.segment, rs.r, rm.m FROM rs JOIN rm ON rm.d = rs.d),
+        s AS (
+            SELECT segment,
+                   CAST(SUM(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS BIGINT)
+                       AS n_up,
+                   CAST(SUM(CASE WHEN m < 0 THEN 1 ELSE 0 END) AS BIGINT)
+                       AS n_down,
+                   CAST(SUM(CASE WHEN m > 0 THEN r ELSE 0 END) AS BIGINT)
+                       AS sr_up,
+                   CAST(SUM(CASE WHEN m > 0 THEN m ELSE 0 END) AS BIGINT)
+                       AS sm_up,
+                   CAST(SUM(CASE WHEN m < 0 THEN r ELSE 0 END) AS BIGINT)
+                       AS sr_down,
+                   CAST(SUM(CASE WHEN m < 0 THEN m ELSE 0 END) AS BIGINT)
+                       AS sm_down
+            FROM j GROUP BY segment
+        )
+        SELECT segment, n_up, n_down,
+               CASE WHEN sm_up <> 0 THEN
+                 CAST(sr_up AS DOUBLE) / CAST(sm_up AS DOUBLE)
+               END AS upside_capture,
+               CASE WHEN sm_down <> 0 THEN
+                 CAST(sr_down AS DOUBLE) / CAST(sm_down AS DOUBLE)
+               END AS downside_capture
+        FROM s ORDER BY segment
+    """,
+)
+def fin_capture_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Morningstar-style up/down-market capture ratios per segment:
+    on days the whole-market revenue return is positive (negative),
+    the segment's mean return divided by the market's mean return over
+    those same days — the asymmetry readout behind 'defensive vs
+    aggressive' fund labels, complementing fin_capm_beta's symmetric
+    slope. Because both means share the SAME day count, the ratio of
+    means collapses EXACTLY to a ratio of integer q9 return sums
+    (n_up cancels), so each capture number is one guarded double
+    division over exact BIGINTs — no float accumulates anywhere. Zero
+    market movement in a regime NULLs that side identically (exact
+    integer <> 0 guard). Corpus work is the shared broadcast-join
+    daily agg; the conditional sums ride the calendar-bounded joined
+    return relation."""
+    daily = seg_daily(spark, sf_dir).persist()
+    rs = seg_returns(daily)
+    rm = mkt_returns(daily)
+    up = F.col("m") > 0
+    down = F.col("m") < 0
+    s = (
+        rs.join(F.broadcast(rm), "d")
+        .groupBy("segment")
+        .agg(
+            F.sum(F.when(up, 1).otherwise(0)).cast("bigint").alias("n_up"),
+            F.sum(F.when(down, 1).otherwise(0)).cast("bigint").alias("n_down"),
+            F.sum(F.when(up, F.col("r")).otherwise(0))
+            .cast("bigint")
+            .alias("sr_up"),
+            F.sum(F.when(up, F.col("m")).otherwise(0))
+            .cast("bigint")
+            .alias("sm_up"),
+            F.sum(F.when(down, F.col("r")).otherwise(0))
+            .cast("bigint")
+            .alias("sr_down"),
+            F.sum(F.when(down, F.col("m")).otherwise(0))
+            .cast("bigint")
+            .alias("sm_down"),
+        )
+    )
+    return s.select(
+        "segment",
+        "n_up",
+        "n_down",
+        F.when(
+            F.col("sm_up") != 0,
+            F.col("sr_up").cast("double") / F.col("sm_up").cast("double"),
+        ).alias("upside_capture"),
+        F.when(
+            F.col("sm_down") != 0,
+            F.col("sr_down").cast("double") / F.col("sm_down").cast("double"),
+        ).alias("downside_capture"),
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# fin_information_ratio — active-return consistency per segment
+
+
+@register(
+    "fin_information_ratio",
+    tags=("finance", "window", "stats"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
+        act AS (
+            SELECT rs.segment, rs.r - rm.m AS a
+            FROM rs JOIN rm ON rm.d = rs.d
+        ),
+        s AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS s1,
+                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0)) * a) AS VARCHAR)
+                        AS DOUBLE) AS s2
+            FROM act GROUP BY segment
+        )
+        SELECT segment, n AS n_days,
+               CASE WHEN n > 1
+                         AND (CAST(n AS DOUBLE) * s2 - s1 * s1) > 0 THEN
+                 (s1 / CAST(n AS DOUBLE))
+                 / sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1)
+                        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1)))
+               END AS ir_daily
+        FROM s ORDER BY segment
+    """,
+)
+def fin_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily information ratio per segment against the whole-market
+    book: IR = mean(active return) / sd(active return), the
+    consistency-of-outperformance number that complements
+    fin_tracking_error (which reports only the denominator). Active
+    returns are DIFFERENCES of the shared q9-quantized integers (exact
+    BIGINTs); mean and sample sd come from two decimal power sums
+    crossing to double once each; IR is ONE guarded expression. Zero
+    active variance NULLs identically. Corpus work is the shared daily
+    agg; the join and moments ride the calendar-bounded return
+    relation."""
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
+    act = rs.join(F.broadcast(rm), "d").select(
+        "segment", (F.col("r") - F.col("m")).alias("a")
+    )
+    s = act.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        as_d(F.sum(F.col("a").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("a").cast("decimal(19,0)") * F.col("a"))).alias("s2"),
+    )
+    n_d = F.col("n").cast("double")
+    var_num = n_d * F.col("s2") - F.col("s1") * F.col("s1")
+    return s.select(
+        "segment",
+        F.col("n").alias("n_days"),
+        F.when(
+            (F.col("n") > 1) & (var_num > 0),
+            (F.col("s1") / n_d) / F.sqrt(var_num / (n_d * (n_d - 1))),
+        ).alias("ir_daily"),
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# fin_m2_modigliani — risk-adjusted return on the market's vol scale
+
+
+@register(
+    "fin_m2_modigliani",
+    tags=("finance", "stats"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
+        segm AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS s1,
+                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * r) AS VARCHAR)
+                        AS DOUBLE) AS s2
+            FROM rs GROUP BY segment
+        ),
+        mm AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS nm,
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS m1,
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
+                        AS DOUBLE) AS m2s
+            FROM rm
+        )
+        SELECT segment, n AS n_days,
+               CASE WHEN n > 1
+                         AND (CAST(n AS DOUBLE) * s2 - s1 * s1) > 0 THEN
+                 (s1 / CAST(n AS DOUBLE))
+                 / sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1)
+                        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1)))
+               END AS sharpe_daily,
+               CASE WHEN n > 1 AND nm > 1
+                         AND (CAST(n AS DOUBLE) * s2 - s1 * s1) > 0 THEN
+                 ((s1 / CAST(n AS DOUBLE))
+                  / sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1)
+                         / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1))))
+                 * sqrt((CAST(nm AS DOUBLE) * m2s - m1 * m1)
+                        / (CAST(nm AS DOUBLE) * (CAST(nm AS DOUBLE) - 1)))
+               END AS m2_daily
+        FROM segm CROSS JOIN mm
+        ORDER BY segment
+    """,
+)
+def fin_m2_modigliani(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Modigliani-Modigliani risk-adjusted performance per segment
+    (rf = 0, documented): M2 = Sharpe_segment * sd_market — what the
+    segment would have returned if levered to the market's volatility,
+    directly comparable across segments in return units (Modigliani &
+    Modigliani 1997). Same integer power-sum machinery as
+    fin_information_ratio (q9 returns, decimal sums, single VARCHAR
+    crossings); sharpe and m2 are each ONE guarded expression whose
+    sub-terms repeat VERBATIM on both engines so the float paths are
+    identical. Zero segment variance NULLs both outputs identically."""
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
+    rm = mkt_returns(seg_daily(spark, sf_dir))
+    segm = rs.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        as_d(F.sum(F.col("r").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("r").cast("decimal(19,0)") * F.col("r"))).alias("s2"),
+    )
+    mm = rm.agg(
+        F.count(F.lit(1)).cast("bigint").alias("nm"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("m1"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("m2s"),
+    )
+    n_d = F.col("n").cast("double")
+    nm_d = F.col("nm").cast("double")
+    var_num = n_d * F.col("s2") - F.col("s1") * F.col("s1")
+    sharpe = (F.col("s1") / n_d) / F.sqrt(var_num / (n_d * (n_d - 1)))
+    sd_mkt = F.sqrt(
+        (nm_d * F.col("m2s") - F.col("m1") * F.col("m1"))
+        / (nm_d * (nm_d - 1))
+    )
+    return (
+        segm.crossJoin(F.broadcast(mm))
+        .select(
+            "segment",
+            F.col("n").alias("n_days"),
+            F.when((F.col("n") > 1) & (var_num > 0), sharpe).alias(
+                "sharpe_daily"
+            ),
+            F.when(
+                (F.col("n") > 1) & (F.col("nm") > 1) & (var_num > 0),
+                sharpe * sd_mkt,
+            ).alias("m2_daily"),
+        )
+        .orderBy("segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_portfolio_turnover — year-over-year mix churn
+
+
+@register(
+    "fin_portfolio_turnover",
+    tags=("finance", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        ys AS (
+            SELECT EXTRACT(year FROM d) AS y, segment,
+                   CAST(SUM(x) AS DECIMAL(18,2)) AS xs
+            FROM daily GROUP BY 1, 2
+        ),
+        yrs AS (SELECT DISTINCT y FROM ys),
+        sgs AS (SELECT DISTINCT segment FROM ys),
+        grid AS (
+            SELECT yrs.y, sgs.segment,
+                   COALESCE(ys.xs, CAST(0 AS DECIMAL(18,2))) AS xs
+            FROM yrs CROSS JOIN sgs
+            LEFT JOIN ys ON ys.y = yrs.y AND ys.segment = sgs.segment
+        ),
+        yt AS (
+            SELECT y, CAST(SUM(xs) AS DECIMAL(18,2)) AS xy
+            FROM grid GROUP BY y
+        ),
+        terms AS (
+            SELECT g.y, yt.xy, ytp.xy AS xyp,
+                   ABS(CAST(g.xs AS DECIMAL(19,2))
+                         * CAST(ytp.xy AS DECIMAL(19,2))
+                       - CAST(gp.xs AS DECIMAL(19,2))
+                         * CAST(yt.xy AS DECIMAL(19,2))) AS num,
+                   CASE WHEN g.xs > 0 THEN 1 ELSE 0 END AS present
+            FROM grid g
+            JOIN grid gp ON gp.y = g.y - 1 AND gp.segment = g.segment
+            JOIN yt ON yt.y = g.y
+            JOIN yt ytp ON ytp.y = g.y - 1
+            WHERE yt.xy > 0 AND ytp.xy > 0
+        )
+        SELECT CAST(y AS BIGINT) AS year,
+               CAST(SUM(present) AS BIGINT) AS n_segments,
+               CAST(CAST(SUM(num) AS VARCHAR) AS DOUBLE)
+                 / (CAST(2 AS DOUBLE)
+                    * CAST(CAST(xy AS VARCHAR) AS DOUBLE)
+                    * CAST(CAST(xyp AS VARCHAR) AS DOUBLE)) AS turnover
+        FROM terms GROUP BY y, xy, xyp ORDER BY year
+    """,
+)
+def fin_portfolio_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Year-over-year portfolio turnover of the segment revenue mix:
+    T_y = 1/2 * sum_s |w_{y,s} - w_{y-1,s}| — the one-period churn
+    sibling of fin_active_share (same common-exact-denominator
+    algebra: |x_ys * X_{y-1} - x_{y-1,s} * X_y| summed as exact
+    DECIMAL(38,4), ONE double division by 2*X_y*X_{y-1} at the edge),
+    over the FULL segment grid so a segment entering or leaving the
+    book contributes its whole weight. n_segments counts segments with
+    revenue in year y. Years with a zero-revenue side are excluded by
+    an exact decimal guard (cannot occur at shipped SFs; documented).
+    Corpus work is the shared daily agg; the grid/lag joins ride the
+    |years| x |segments| relation."""
+    daily = seg_daily(spark, sf_dir)
+    ys = daily.groupBy(F.year("d").alias("y"), "segment").agg(
+        F.sum("x").cast("decimal(18,2)").alias("xs")
+    )
+    yrs = ys.select("y").distinct()
+    sgs = ys.select("segment").distinct()
+    grid = (
+        yrs.crossJoin(F.broadcast(sgs))
+        .join(F.broadcast(ys), ["y", "segment"], "left")
+        .select(
+            "y",
+            "segment",
+            F.coalesce(F.col("xs"), F.lit(0).cast("decimal(18,2)")).alias("xs"),
+        )
+    )
+    yt = grid.groupBy("y").agg(F.sum("xs").cast("decimal(18,2)").alias("xy"))
+    gp = grid.select(
+        (F.col("y") + 1).alias("y"),
+        "segment",
+        F.col("xs").alias("xsp"),
+    )
+    ytp = yt.select((F.col("y") + 1).alias("y"), F.col("xy").alias("xyp"))
+    terms = (
+        grid.join(F.broadcast(gp), ["y", "segment"])
+        .join(F.broadcast(yt), "y")
+        .join(F.broadcast(ytp), "y")
+        .filter((F.col("xy") > 0) & (F.col("xyp") > 0))
+        .select(
+            "y",
+            "xy",
+            "xyp",
+            F.abs(
+                F.col("xs").cast("decimal(19,2)")
+                * F.col("xyp").cast("decimal(19,2)")
+                - F.col("xsp").cast("decimal(19,2)")
+                * F.col("xy").cast("decimal(19,2)")
+            ).alias("num"),
+            F.when(F.col("xs") > 0, 1).otherwise(0).alias("present"),
+        )
+    )
+    return (
+        terms.groupBy("y", "xy", "xyp")
+        .agg(
+            F.sum("present").cast("bigint").alias("n_segments"),
+            (
+                as_d(F.sum("num"))
+                / (F.lit(2.0) * as_d(F.col("xy")) * as_d(F.col("xyp")))
+            ).alias("turnover"),
+        )
+        .select(
+            F.col("y").cast("bigint").alias("year"), "n_segments", "turnover"
+        )
+        .orderBy("year")
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_brinson_attribution — allocation / selection / interaction
+
+
+@register(
+    "fin_brinson_attribution",
+    tags=("finance", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        pdaily AS (
+            SELECT c.c_mktsegment AS segment,
+                   EXTRACT(year FROM CAST(o.o_orderdate AS DATE)) AS y,
+                   CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
+                        AS DECIMAL(18,2)) AS xp
+            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+            WHERE o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+            GROUP BY 1, 2
+        ),
+        bys AS (
+            SELECT EXTRACT(year FROM d) AS y, segment,
+                   CAST(SUM(x) AS DECIMAL(18,2)) AS xb
+            FROM daily GROUP BY 1, 2
+        ),
+        yrs AS (SELECT DISTINCT y FROM bys),
+        sgs AS (SELECT DISTINCT segment FROM bys),
+        grid AS (
+            SELECT yrs.y, sgs.segment,
+                   COALESCE(bys.xb, CAST(0 AS DECIMAL(18,2))) AS xb,
+                   COALESCE(pdaily.xp, CAST(0 AS DECIMAL(18,2))) AS xp
+            FROM yrs CROSS JOIN sgs
+            LEFT JOIN bys ON bys.y = yrs.y AND bys.segment = sgs.segment
+            LEFT JOIN pdaily ON pdaily.y = yrs.y
+                            AND pdaily.segment = sgs.segment
+        ),
+        tots AS (
+            SELECT y, CAST(SUM(xb) AS DECIMAL(18,2)) AS tb,
+                   CAST(SUM(xp) AS DECIMAL(18,2)) AS tp
+            FROM grid GROUP BY y
+        ),
+        j AS (
+            SELECT g.y, g.segment,
+                   CAST(CAST(g.xb AS VARCHAR) AS DOUBLE) AS xb,
+                   CAST(CAST(g.xp AS VARCHAR) AS DOUBLE) AS xp,
+                   CAST(CAST(gp.xb AS VARCHAR) AS DOUBLE) AS xbp,
+                   CAST(CAST(gp.xp AS VARCHAR) AS DOUBLE) AS xpp,
+                   CAST(CAST(t.tb AS VARCHAR) AS DOUBLE) AS tb,
+                   CAST(CAST(tp2.tb AS VARCHAR) AS DOUBLE) AS tbp,
+                   CAST(CAST(t.tp AS VARCHAR) AS DOUBLE) AS tpv,
+                   CAST(CAST(tp2.tp AS VARCHAR) AS DOUBLE) AS tpp
+            FROM grid g
+            JOIN grid gp ON gp.y = g.y - 1 AND gp.segment = g.segment
+            JOIN tots t ON t.y = g.y
+            JOIN tots tp2 ON tp2.y = g.y - 1
+        )
+        SELECT CAST(y AS BIGINT) AS year, segment,
+               CASE WHEN xbp > 0 AND xpp > 0 AND tbp > 0 AND tpp > 0 THEN
+                 (xpp / tpp - xbp / tbp) * ((xb / xbp - 1) - (tb / tbp - 1))
+               END AS allocation,
+               CASE WHEN xbp > 0 AND xpp > 0 AND tbp > 0 AND tpp > 0 THEN
+                 (xbp / tbp) * ((xp / xpp - 1) - (xb / xbp - 1))
+               END AS selection,
+               CASE WHEN xbp > 0 AND xpp > 0 AND tbp > 0 AND tpp > 0 THEN
+                 (xpp / tpp - xbp / tbp) * ((xp / xpp - 1) - (xb / xbp - 1))
+               END AS interaction
+        FROM j ORDER BY year, segment
+    """,
+)
+def fin_brinson_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brinson-Hood-Beebower performance attribution of the
+    HIGH-PRIORITY order book (the 'portfolio': priorities 1-2) against
+    the whole book (the 'benchmark'), categories = market segments,
+    periods = years, weights = PRIOR-year value shares, returns =
+    year-over-year revenue growth per category: allocation =
+    (w_p - w_b)(r_b,s - r_b), selection = w_b (r_p,s - r_b,s),
+    interaction = (w_p - w_b)(r_p,s - r_b,s) (Brinson, Hood & Beebower
+    1986). Exactness: every input crosses decimal->double ONCE
+    (VARCHAR route), each effect is ONE fixed-parenthesization
+    expression with sub-terms repeated verbatim on both engines — no
+    multi-term float sums. A zero prior-year value on any of the four
+    sides NULLs all three effects identically (the r_b total-return
+    term uses the same guard set; documented — at shipped SFs every
+    year/segment has revenue on both sides). Corpus work: two
+    broadcast-dim aggs; the attribution rides the year x segment
+    grid."""
+    daily = seg_daily(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    pdaily = (
+        o.filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_mktsegment").alias("segment"),
+            F.year("o_orderdate").alias("y"),
+        )
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+             .cast("decimal(18,2)").alias("xp"))
+    )
+    bys = daily.groupBy(F.year("d").alias("y"), "segment").agg(
+        F.sum("x").cast("decimal(18,2)").alias("xb")
+    )
+    yrs = bys.select("y").distinct()
+    sgs = bys.select("segment").distinct()
+    zero = F.lit(0).cast("decimal(18,2)")
+    grid = (
+        yrs.crossJoin(F.broadcast(sgs))
+        .join(F.broadcast(bys), ["y", "segment"], "left")
+        .join(F.broadcast(pdaily), ["y", "segment"], "left")
+        .select(
+            "y",
+            "segment",
+            F.coalesce(F.col("xb"), zero).alias("xb"),
+            F.coalesce(F.col("xp"), zero).alias("xp"),
+        )
+    )
+    tots = grid.groupBy("y").agg(
+        F.sum("xb").cast("decimal(18,2)").alias("tb"),
+        F.sum("xp").cast("decimal(18,2)").alias("tp"),
+    )
+    gp = grid.select(
+        (F.col("y") + 1).alias("y"),
+        "segment",
+        F.col("xb").alias("xbp_d"),
+        F.col("xp").alias("xpp_d"),
+    )
+    totp = tots.select(
+        (F.col("y") + 1).alias("y"),
+        F.col("tb").alias("tbp_d"),
+        F.col("tp").alias("tpp_d"),
+    )
+    j = (
+        grid.join(F.broadcast(gp), ["y", "segment"])
+        .join(F.broadcast(tots), "y")
+        .join(F.broadcast(totp), "y")
+        .select(
+            "y",
+            "segment",
+            as_d(F.col("xb")).alias("xb"),
+            as_d(F.col("xp")).alias("xp"),
+            as_d(F.col("xbp_d")).alias("xbp"),
+            as_d(F.col("xpp_d")).alias("xpp"),
+            as_d(F.col("tb")).alias("tb"),
+            as_d(F.col("tbp_d")).alias("tbp"),
+            as_d(F.col("tp")).alias("tpv"),
+            as_d(F.col("tpp_d")).alias("tpp"),
+        )
+    )
+    ok = (
+        (F.col("xbp") > 0)
+        & (F.col("xpp") > 0)
+        & (F.col("tbp") > 0)
+        & (F.col("tpp") > 0)
+    )
+    wp = F.col("xpp") / F.col("tpp")
+    wb = F.col("xbp") / F.col("tbp")
+    rbs = F.col("xb") / F.col("xbp") - 1
+    rps = F.col("xp") / F.col("xpp") - 1
+    rb = F.col("tb") / F.col("tbp") - 1
+    return j.select(
+        F.col("y").cast("bigint").alias("year"),
+        "segment",
+        F.when(ok, (wp - wb) * (rbs - rb)).alias("allocation"),
+        F.when(ok, wb * (rps - rbs)).alias("selection"),
+        F.when(ok, (wp - wb) * (rps - rbs)).alias("interaction"),
+    ).orderBy("year", "segment")
+
+
+# ---------------------------------------------------------------------------
+# fin_burke_ratio — drawdown-depth-penalized performance
+
+
+@register(
+    "fin_burke_ratio",
+    tags=("finance", "window"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        pk AS (
+            SELECT d, xm,
+                   MAX(xm) OVER (ORDER BY d
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                       AS peak
+            FROM mkt
+        ),
+        flagged AS (
+            SELECT d, xm, peak,
+                   CASE WHEN xm < peak THEN 1 ELSE 0 END AS below,
+                   ROW_NUMBER() OVER (ORDER BY d) AS rn
+            FROM pk
+        ),
+        isl AS (
+            SELECT *,
+                   rn - ROW_NUMBER() OVER (PARTITION BY below ORDER BY d)
+                       AS grp
+            FROM flagged
+        ),
+        eps AS (
+            SELECT grp,
+                   CAST(FLOOR(MAX(
+                       CAST(CAST(peak - xm AS VARCHAR) AS DOUBLE)
+                       / CAST(CAST(peak AS VARCHAR) AS DOUBLE))
+                       * CAST(1e9 AS DOUBLE)) AS BIGINT) AS q
+            FROM isl WHERE below = 1 GROUP BY grp
+        ),
+        dd AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_episodes,
+                   CAST(CAST(SUM(CAST(q AS DECIMAL(19,0)) * q) AS VARCHAR)
+                        AS DOUBLE) AS sq2
+            FROM eps
+        ),
+        mu AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS s1
+            FROM rm
+        )
+        SELECT mu.n_days, dd.n_episodes,
+               dd.sq2 / CAST(1e18 AS DOUBLE) AS sum_dd2,
+               CASE WHEN dd.sq2 > 0 AND mu.n_days > 0 THEN
+                 ((mu.s1 / CAST(1e9 AS DOUBLE)) / CAST(mu.n_days AS DOUBLE))
+                 / sqrt(dd.sq2 / CAST(1e18 AS DOUBLE))
+               END AS burke_daily
+        FROM mu CROSS JOIN dd
+    """,
+)
+def fin_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Burke ratio of the whole-market daily revenue series: mean
+    daily return divided by sqrt(sum of squared drawdown depths) over
+    below-peak EPISODES (Burke 1994) — penalizes many deep drawdowns
+    harder than max-drawdown-based Calmar (fin_calmar_ratio). The
+    running peak is an exact decimal window max; each day's drawdown
+    fraction is one VARCHAR-routed division; episodes come from the
+    standard gaps-and-islands double row_number; each episode's MAX
+    depth is a deterministic double max, q9-FLOOR-quantized to BIGINT
+    so the across-episodes sum of squares is an exact DECIMAL — the
+    only unbounded-count float sum is thereby integerized. Burke is
+    ONE guarded expression. No drawdowns (sq2 = 0) NULLs identically.
+    The running-peak window is calendar-bounded (O(days))."""
+    daily = seg_daily(spark, sf_dir)
+    mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
+    wd = Window.orderBy("d")  # calendar-bounded
+    pk = mkt.select(
+        "d",
+        "xm",
+        F.max("xm").over(wd.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("peak"),
+    )
+    flagged = pk.select(
+        "d",
+        "xm",
+        "peak",
+        F.when(F.col("xm") < F.col("peak"), 1).otherwise(0).alias("below"),
+        F.row_number().over(wd).alias("rn"),
+    )
+    isl = flagged.withColumn(
+        "grp",
+        F.col("rn")
+        - F.row_number().over(Window.partitionBy("below").orderBy("d")),
+    )
+    eps = (
+        isl.filter(F.col("below") == 1)
+        .groupBy("grp")
+        .agg(
+            F.floor(
+                F.max(
+                    as_d(F.col("peak") - F.col("xm")) / as_d(F.col("peak"))
+                )
+                * F.lit(1e9)
+            ).cast("bigint").alias("q")
+        )
+    )
+    dd = eps.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_episodes"),
+        as_d(F.sum(F.col("q").cast("decimal(19,0)") * F.col("q"))).alias(
+            "sq2"
+        ),
+    )
+    rm = mkt_returns(seg_daily(spark, sf_dir))
+    mu = rm.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
+    )
+    sum_dd2 = F.col("sq2") / F.expr("CAST(1e18 AS DOUBLE)")
+    return (
+        mu.crossJoin(F.broadcast(dd))
+        .select(
+            "n_days",
+            "n_episodes",
+            sum_dd2.alias("sum_dd2"),
+            F.when(
+                (F.col("sq2") > 0) & (F.col("n_days") > 0),
+                (
+                    (F.col("s1") / F.expr("CAST(1e9 AS DOUBLE)"))
+                    / F.col("n_days").cast("double")
+                )
+                / F.sqrt(sum_dd2),
+            ).alias("burke_daily"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_cornish_fisher_var — higher-moment VaR correction
+
+
+@register(
+    "fin_cornish_fisher_var",
+    tags=("finance", "stats"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        r6 AS (
+            SELECT CAST(FLOOR(CAST(m AS DOUBLE) / CAST(1e3 AS DOUBLE))
+                        AS BIGINT) AS v
+            FROM rm
+        ),
+        split AS (
+            SELECT v, v // 10000 AS a, v % 10000 AS b FROM r6
+        ),
+        s AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS s1,
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(15,0)) * v) AS VARCHAR)
+                        AS DOUBLE) AS s2,
+                   CAST(CAST(SUM(CAST(CAST(v AS DECIMAL(15,0)) * v
+                                      AS DECIMAL(23,0)) * v) AS VARCHAR)
+                        AS DOUBLE) AS s3,
+                   CAST(1e16 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST(a*a*a*a AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(4e12 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST(a*a*a*b AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(6e8 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST((a*b)*(a*b) AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(4e4 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST(a*b*b*b AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(CAST(SUM(CAST((b*b)*(b*b) AS DECIMAL(28,0)))
+                               AS VARCHAR) AS DOUBLE) AS s4
+            FROM split
+        ),
+        m AS (
+            SELECT n,
+                   s1 / n AS mu,
+                   s2 / n - (s1 / n) * (s1 / n) AS m2,
+                   s3 / n - 3 * (s1 / n) * (s2 / n)
+                     + 2 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
+                   s4 / n - 4 * (s1 / n) * (s3 / n)
+                     + 6 * (s1 / n) * (s1 / n) * (s2 / n)
+                     - 3 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n) AS m4
+            FROM s
+        ),
+        zc AS (SELECT CAST('2.3263478740408408' AS DOUBLE) AS z)
+        SELECT n,
+               mu / CAST(1e6 AS DOUBLE) AS mean_r,
+               CASE WHEN m2 > 0 THEN sqrt(m2) / CAST(1e6 AS DOUBLE) END
+                   AS sd_r,
+               CASE WHEN m2 > 0 THEN
+                 m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2)) END AS skewness,
+               CASE WHEN m2 > 0 THEN m4 / (m2 * m2) END AS kurtosis,
+               CASE WHEN m2 > 0 THEN
+                 -((mu / CAST(1e6 AS DOUBLE))
+                   + (sqrt(m2) / CAST(1e6 AS DOUBLE))
+                     * (z
+                        + (z * z - 1)
+                          * (m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2))) / 6
+                        + (z * z * z - 3 * z)
+                          * (m4 / (m2 * m2) - 3) / 24
+                        - (2 * z * z * z - 5 * z)
+                          * (m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2)))
+                          * (m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2))) / 36))
+               END AS var_99_cf
+        FROM m CROSS JOIN zc
+    """,
+)
+def fin_cornish_fisher_var(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cornish-Fisher 99% VaR of the whole-market daily revenue
+    return: the four-moment quantile correction z_cf = z + (z^2-1)S/6
+    + (z^3-3z)(K-3)/24 - (2z^3-5z)S^2/36, VaR = -(mu + sigma*z_cf)
+    (Cornish & Fisher 1938; the parametric-VaR upgrade every fat-tail
+    desk runs next to fin_var_parametric's normal). Returns are
+    re-quantized to q6 (micro-units) so the fourth power sum fits the
+    jarque-bera five-binomial-sum machinery with SIGNED a/b (both
+    engines' integer div/mod truncate toward zero identically, so
+    v = 1e4*a + b holds exactly for negatives); the 99% normal
+    quantile is a string-routed literal; every moment/statistic is ONE
+    identically-parenthesized double expression with sqrt(m2)^3 (not
+    libm pow). Zero variance NULLs all risk outputs identically. One
+    scan, one 8-number agg."""
+    rm = mkt_returns(seg_daily(spark, sf_dir))
+    r6 = rm.select(
+        F.floor(F.col("m").cast("double") / F.expr("CAST(1e3 AS DOUBLE)"))
+        .cast("bigint")
+        .alias("v")
+    )
+    base = r6.select(
+        "v",
+        F.expr("v div 10000").alias("a"),
+        (F.col("v") % 10000).alias("b"),
+    )
+    v15 = F.col("v").cast("decimal(15,0)")
+    a, b = F.col("a"), F.col("b")
+    d28 = "decimal(28,0)"
+    s = base.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        as_d(F.sum(F.col("v").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(v15 * F.col("v"))).alias("s2"),
+        as_d(
+            F.sum((v15 * F.col("v")).cast("decimal(23,0)") * F.col("v"))
+        ).alias("s3"),
+        as_d(F.sum((a * a * a * a).cast(d28))).alias("sa4"),
+        as_d(F.sum((a * a * a * b).cast(d28))).alias("sa3b"),
+        as_d(F.sum(((a * b) * (a * b)).cast(d28))).alias("sa2b2"),
+        as_d(F.sum((a * b * b * b).cast(d28))).alias("sab3"),
+        as_d(F.sum(((b * b) * (b * b)).cast(d28))).alias("sb4"),
+    ).select(
+        "n",
+        "s1",
+        "s2",
+        "s3",
+        (
+            F.expr("CAST(1e16 AS DOUBLE)") * F.col("sa4")
+            + F.expr("CAST(4e12 AS DOUBLE)") * F.col("sa3b")
+            + F.expr("CAST(6e8 AS DOUBLE)") * F.col("sa2b2")
+            + F.expr("CAST(4e4 AS DOUBLE)") * F.col("sab3")
+            + F.col("sb4")
+        ).alias("s4"),
+    )
+    n_d = F.col("n").cast("double")
+    mu = F.col("s1") / n_d
+    m2 = F.col("s2") / n_d - mu * mu
+    m3 = F.col("s3") / n_d - 3 * mu * (F.col("s2") / n_d) + 2 * mu * mu * mu
+    m4 = (
+        F.col("s4") / n_d
+        - 4 * mu * (F.col("s3") / n_d)
+        + 6 * mu * mu * (F.col("s2") / n_d)
+        - 3 * mu * mu * mu * mu
+    )
+    sk = m3 / (F.sqrt(m2) * F.sqrt(m2) * F.sqrt(m2))
+    ku = m4 / (m2 * m2)
+    z = F.expr("CAST('2.3263478740408408' AS DOUBLE)")
+    e6 = F.expr("CAST(1e6 AS DOUBLE)")
+    zcf = (
+        z
+        + (z * z - 1) * sk / 6
+        + (z * z * z - 3 * z) * (ku - 3) / 24
+        - (2 * z * z * z - 5 * z) * sk * sk / 36
+    )
+    return s.select(
+        "n",
+        (mu / e6).alias("mean_r"),
+        F.when(m2 > 0, F.sqrt(m2) / e6).alias("sd_r"),
+        F.when(m2 > 0, sk).alias("skewness"),
+        F.when(m2 > 0, ku).alias("kurtosis"),
+        F.when(m2 > 0, -((mu / e6) + (F.sqrt(m2) / e6) * zcf)).alias(
+            "var_99_cf"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_sterling_ratio — mean return over AVERAGE drawdown depth
+
+
+@register(
+    "fin_sterling_ratio",
+    tags=("finance", "window"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        pk AS (
+            SELECT d, xm,
+                   MAX(xm) OVER (ORDER BY d
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                       AS peak
+            FROM mkt
+        ),
+        flagged AS (
+            SELECT d, xm, peak,
+                   CASE WHEN xm < peak THEN 1 ELSE 0 END AS below,
+                   ROW_NUMBER() OVER (ORDER BY d) AS rn
+            FROM pk
+        ),
+        isl AS (
+            SELECT *,
+                   rn - ROW_NUMBER() OVER (PARTITION BY below ORDER BY d)
+                       AS grp
+            FROM flagged
+        ),
+        eps AS (
+            SELECT grp,
+                   CAST(FLOOR(MAX(
+                       CAST(CAST(peak - xm AS VARCHAR) AS DOUBLE)
+                       / CAST(CAST(peak AS VARCHAR) AS DOUBLE))
+                       * CAST(1e9 AS DOUBLE)) AS BIGINT) AS q
+            FROM isl WHERE below = 1 GROUP BY grp
+        ),
+        dd AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_episodes,
+                   CAST(SUM(q) AS BIGINT) AS sq
+            FROM eps
+        ),
+        mu AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS s1
+            FROM rm
+        )
+        SELECT mu.n_days, dd.n_episodes,
+               CASE WHEN dd.n_episodes > 0 THEN
+                 CAST(dd.sq AS DOUBLE)
+                   / (CAST(dd.n_episodes AS DOUBLE) * CAST(1e9 AS DOUBLE))
+               END AS avg_drawdown,
+               CASE WHEN dd.sq > 0 AND mu.n_days > 0 THEN
+                 ((mu.s1 / CAST(1e9 AS DOUBLE)) / CAST(mu.n_days AS DOUBLE))
+                 / (CAST(dd.sq AS DOUBLE)
+                    / (CAST(dd.n_episodes AS DOUBLE) * CAST(1e9 AS DOUBLE)))
+               END AS sterling_daily
+        FROM mu CROSS JOIN dd
+    """,
+)
+def fin_sterling_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sterling ratio (average-drawdown flavor, convention pinned: no
+    10% haircut, all episodes weighted equally): mean daily return
+    divided by the AVERAGE below-peak episode depth — the linear-
+    penalty sibling of fin_burke_ratio's quadratic penalty, same
+    gaps-and-islands episode machinery, q9-integerized episode depths
+    so the across-episodes average is a ratio of exact integers. Zero
+    drawdown NULLs identically. Running-peak window is O(days)."""
+    daily = seg_daily(spark, sf_dir)
+    mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
+    wd = Window.orderBy("d")  # calendar-bounded
+    pk = mkt.select(
+        "d",
+        "xm",
+        F.max("xm").over(wd.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("peak"),
+    )
+    flagged = pk.select(
+        "d",
+        "xm",
+        "peak",
+        F.when(F.col("xm") < F.col("peak"), 1).otherwise(0).alias("below"),
+        F.row_number().over(wd).alias("rn"),
+    )
+    isl = flagged.withColumn(
+        "grp",
+        F.col("rn")
+        - F.row_number().over(Window.partitionBy("below").orderBy("d")),
+    )
+    eps = (
+        isl.filter(F.col("below") == 1)
+        .groupBy("grp")
+        .agg(
+            F.floor(
+                F.max(
+                    as_d(F.col("peak") - F.col("xm")) / as_d(F.col("peak"))
+                )
+                * F.lit(1e9)
+            ).cast("bigint").alias("q")
+        )
+    )
+    dd = eps.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_episodes"),
+        F.sum("q").cast("bigint").alias("sq"),
+    )
+    rm = mkt_returns(seg_daily(spark, sf_dir))
+    mu = rm.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
+    )
+    e9 = F.expr("CAST(1e9 AS DOUBLE)")
+    avg_dd = F.col("sq").cast("double") / (
+        F.col("n_episodes").cast("double") * e9
+    )
+    return (
+        mu.crossJoin(F.broadcast(dd))
+        .select(
+            "n_days",
+            "n_episodes",
+            F.when(F.col("n_episodes") > 0, avg_dd).alias("avg_drawdown"),
+            F.when(
+                (F.col("sq") > 0) & (F.col("n_days") > 0),
+                ((F.col("s1") / e9) / F.col("n_days").cast("double"))
+                / avg_dd,
+            ).alias("sterling_daily"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# fin_upside_potential_ratio — partial-moment performance
+
+
+@register(
+    "fin_upside_potential_ratio",
+    tags=("finance", "stats"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
+        s AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(CASE WHEN r > 0 THEN r ELSE 0 END) AS BIGINT)
+                       AS up1,
+                   CAST(CAST(SUM(CASE WHEN r < 0
+                                 THEN CAST(r AS DECIMAL(19,0)) * r
+                                 ELSE 0 END) AS VARCHAR) AS DOUBLE) AS dn2
+            FROM rs GROUP BY segment
+        )
+        SELECT segment, n AS n_days,
+               CAST(up1 AS DOUBLE)
+                   / (CAST(n AS DOUBLE) * CAST(1e9 AS DOUBLE))
+                   AS upside_potential,
+               CASE WHEN dn2 > 0 THEN
+                 sqrt(dn2 / CAST(n AS DOUBLE)) / CAST(1e9 AS DOUBLE)
+               END AS downside_deviation,
+               CASE WHEN dn2 > 0 THEN
+                 (CAST(up1 AS DOUBLE)
+                    / (CAST(n AS DOUBLE) * CAST(1e9 AS DOUBLE)))
+                 / (sqrt(dn2 / CAST(n AS DOUBLE)) / CAST(1e9 AS DOUBLE))
+               END AS upr
+        FROM s ORDER BY segment
+    """,
+)
+def fin_upside_potential_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Upside potential ratio per segment at threshold 0 (Sortino &
+    van der Meer 1991): E[max(r,0)] / sqrt(E[min(r,0)^2]) — rewards
+    upside while penalizing only downside dispersion, the partial-
+    moment refinement of fin_sharpe_sortino (which shares the
+    denominator but uses MEAN excess in the numerator). The upside sum
+    is a conditional BIGINT sum of q9 returns; the downside second
+    partial moment is a conditional DECIMAL sum crossing to double
+    once; both population moments (/n, convention pinned) and the
+    ratio are fixed single expressions. No negative days -> NULL
+    identically. One scan on the shared return relation."""
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
+    s = rs.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.when(F.col("r") > 0, F.col("r")).otherwise(0))
+        .cast("bigint")
+        .alias("up1"),
+        as_d(
+            F.sum(
+                F.when(
+                    F.col("r") < 0,
+                    F.col("r").cast("decimal(19,0)") * F.col("r"),
+                ).otherwise(F.lit(0).cast("decimal(38,0)"))
+            )
+        ).alias("dn2"),
+    )
+    n_d = F.col("n").cast("double")
+    e9 = F.expr("CAST(1e9 AS DOUBLE)")
+    upp = F.col("up1").cast("double") / (n_d * e9)
+    ddev = F.sqrt(F.col("dn2") / n_d) / e9
+    return s.select(
+        "segment",
+        F.col("n").alias("n_days"),
+        upp.alias("upside_potential"),
+        F.when(F.col("dn2") > 0, ddev).alias("downside_deviation"),
+        F.when(F.col("dn2") > 0, upp / ddev).alias("upr"),
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# fin_kupiec_pof — Kupiec proportion-of-failures likelihood ratio on
+# the VaR exception counts
+
+
+def _kupiec_sql() -> str:
+
+    lnq = "CAST(ln({x}) AS DECIMAL(12,6))"
+    l_p = lnq.format(x="CAST('0.05' AS DOUBLE)")
+    l_1p = lnq.format(x="CAST('0.95' AS DOUBLE)")
+    l_fr = lnq.format(
+        x="CAST(exceptions AS DOUBLE) / CAST(n_test AS DOUBLE)"
+    )
+    l_1fr = lnq.format(
+        x="CAST(n_test - exceptions AS DOUBLE) / CAST(n_test AS DOUBLE)"
+    )
+    return f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        ret AS (
+            SELECT segment, d,
+                   {o_ret_q9('x', 'xp')} AS r
+            FROM (SELECT segment, d, x,
+                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
+                  FROM daily)
+            WHERE xp IS NOT NULL
+        ),
+        est AS (SELECT * FROM ret WHERE d < DATE '1998-01-01'),
+        ranked AS (
+            SELECT segment, r,
+                   ROW_NUMBER() OVER (PARTITION BY segment ORDER BY r, d)
+                       AS rk,
+                   COUNT(*) OVER (PARTITION BY segment) AS n1
+            FROM est
+        ),
+        var_t AS (
+            SELECT segment,
+                   MIN(CASE WHEN rk = CAST((n1 + 19) // 20 AS BIGINT)
+                            THEN r END) AS var_q9
+            FROM ranked GROUP BY segment
+        ),
+        s AS (
+            SELECT ret.segment,
+                   CAST(COUNT(*) AS BIGINT) AS n_test,
+                   CAST(SUM(CASE WHEN ret.r < v.var_q9 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS exceptions
+            FROM ret JOIN var_t v ON v.segment = ret.segment
+            WHERE ret.d >= DATE '1998-01-01'
+            GROUP BY ret.segment
+        ),
+        lr AS (
+            SELECT segment, n_test, exceptions,
+                   CAST('-2.0' AS DOUBLE) * CAST(CAST(
+                       (n_test - exceptions) * {l_1p}
+                       + exceptions * {l_p}
+                       - (CASE WHEN exceptions < n_test
+                               THEN (n_test - exceptions) * {l_1fr}
+                               ELSE CAST(0 AS DECIMAL(12,6)) END)
+                       - (CASE WHEN exceptions > 0
+                               THEN exceptions * {l_fr}
+                               ELSE CAST(0 AS DECIMAL(12,6)) END)
+                   AS VARCHAR) AS DOUBLE) AS lr_pof
+            FROM s WHERE n_test > 0
+        )
+        SELECT segment, n_test, exceptions, lr_pof,
+               (lr_pof > CAST('3.841459' AS DOUBLE)) AS reject_95
+        FROM lr ORDER BY segment
+    """
+
+
+@register(
+    "fin_kupiec_pof",
+    tags=("finance", "risk", "agg"),
+    oracle=_kupiec_sql(),
+)
+def fin_kupiec_pof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kupiec proportion-of-failures (POF) test on the 95% VaR
+    exception counts — the likelihood-ratio companion
+    fin_var_exception_backtest's docstring explicitly deferred
+    ("the Kupiec POF likelihood ratio needs ln — kept off the oracle
+    surface per the libm rule"): with the round-13 quantized-ln
+    recipe, that rule no longer blocks it. Same estimation/test
+    machinery (first-half historical VaR at the exact integer rank
+    (n+19) div 20 over q9 returns, second-half exception count);
+    LR_pof = -2[(n-x)ln(1-p) + x ln p - (n-x)ln(1-x/n) - x ln(x/n)],
+    all four logs quantized to DECIMAL(12,6) (the two constants from
+    string-routed literals), multiplied by exact integer counts, and
+    combined in ONE exact decimal expression crossing to double once
+    — zero-exception and all-exception edges drop their undefined
+    terms by the standard 0 ln 0 = 0 convention, identically guarded
+    on both engines. Rejection at the chi-square(1) 95% critical
+    value (string-routed). Per-segment windows ride O(days) rows."""
+
+    daily = seg_daily(spark, sf_dir)
+    ret = seg_returns(daily).persist()
+    cut = F.lit("1998-01-01").cast("date")
+    est = ret.filter(F.col("d") < cut)
+    wr = Window.partitionBy("segment").orderBy("r", "d")
+    wn = Window.partitionBy("segment")
+    ranked = est.select(
+        "segment",
+        "r",
+        F.row_number().over(wr).alias("rk"),
+        F.count(F.lit(1)).over(wn).alias("n1"),
+    )
+    var_t = ranked.groupBy("segment").agg(
+        F.min(
+            F.when(
+                F.col("rk") == F.expr("CAST((n1 + 19) DIV 20 AS BIGINT)"),
+                F.col("r"),
+            )
+        ).alias("var_q9")
+    )
+    s = (
+        ret.filter(F.col("d") >= cut)
+        .join(F.broadcast(var_t), "segment")
+        .groupBy("segment")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_test"),
+            F.sum(F.when(F.col("r") < F.col("var_q9"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("exceptions"),
+        )
+        .filter(F.col("n_test") > 0)
+    )
+    lnq = lambda c: F.log(c).cast("decimal(12,6)")  # noqa: E731
+    l_1p = lnq(F.lit("0.95").cast("double"))
+    l_p = lnq(F.lit("0.05").cast("double"))
+    n_d = F.col("n_test").cast("double")
+    x_d = F.col("exceptions").cast("double")
+    l_fr = lnq(x_d / n_d)
+    l_1fr = lnq((F.col("n_test") - F.col("exceptions")).cast("double") / n_d)
+    zero_dec = F.lit(0).cast("decimal(12,6)")
+    inner = (
+        (F.col("n_test") - F.col("exceptions")) * l_1p
+        + F.col("exceptions") * l_p
+        - F.when(F.col("exceptions") < F.col("n_test"),
+                 (F.col("n_test") - F.col("exceptions")) * l_1fr
+                 ).otherwise(zero_dec)
+        - F.when(F.col("exceptions") > 0,
+                 F.col("exceptions") * l_fr).otherwise(zero_dec)
+    )
+    out = s.select(
+        "segment",
+        "n_test",
+        "exceptions",
+        (
+            F.lit("-2.0").cast("double")
+            * inner.cast("string").cast("double")
+        ).alias("lr_pof"),
+    )
+    return out.select(
+        "segment",
+        "n_test",
+        "exceptions",
+        "lr_pof",
+        (F.col("lr_pof") > F.lit("3.841459").cast("double")).alias(
+            "reject_95"
+        ),
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# fin_tail_ratio — P95 / |P5| of daily segment returns
+
+
+@register(
+    "fin_tail_ratio",
+    tags=("finance", "window", "risk"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        ret AS (
+            SELECT segment, d,
+                   {o_ret_q9('x', 'xp')} AS r
+            FROM (SELECT segment, d, x,
+                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
+                  FROM daily)
+            WHERE xp IS NOT NULL
+        ),
+        ranked AS (
+            SELECT segment, r,
+                   ROW_NUMBER() OVER (PARTITION BY segment
+                                      ORDER BY r, d) AS rk_lo,
+                   COUNT(*) OVER (PARTITION BY segment) AS n
+            FROM ret
+        ),
+        picks AS (
+            SELECT segment,
+                   CAST(MIN(n) AS BIGINT) AS n,
+                   CAST(SUM(CASE WHEN rk_lo = (n + 19) // 20
+                                 THEN r ELSE 0 END) AS BIGINT) AS p5,
+                   CAST(SUM(CASE WHEN rk_lo = (19 * (n + 1)) // 20
+                                 THEN r ELSE 0 END) AS BIGINT) AS p95
+            FROM ranked GROUP BY segment
+        )
+        SELECT segment, n,
+               CAST(p5 AS DOUBLE) / 1e9 AS p5_ret,
+               CAST(p95 AS DOUBLE) / 1e9 AS p95_ret,
+               CASE WHEN p5 < 0 THEN
+                 CAST(p95 AS DOUBLE) / CAST(-p5 AS DOUBLE)
+               END AS tail_ratio
+        FROM picks ORDER BY segment
+    """,
+)
+def fin_tail_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tail ratio per market segment: the 95th-percentile daily return
+    over the magnitude of the 5th — >1 means the right tail outruns
+    the left (asymmetry a Sharpe ratio can't see); the
+    order-statistic sibling of fin_rachev_ratio (which averages the
+    tails instead of picking them). Same exactness recipe: returns
+    floor-quantize to 1e-9 integers; the two picks are PINNED order
+    statistics at ceil(n/20) and ceil(19n/20) via integer DIV rank
+    formulas (never a double rank, never an engine percentile); the
+    ratio NULLs when the 5th percentile is non-negative (no left
+    tail — degenerate, documented). One rank window over
+    calendar-bounded daily rows per segment."""
+    daily = seg_daily(spark, sf_dir)
+    ret = seg_returns(daily)
+    w_lo = Window.partitionBy("segment").orderBy("r", "d")
+    w_n = Window.partitionBy("segment")
+    ranked = ret.select(
+        "segment",
+        "r",
+        F.row_number().over(w_lo).alias("rk_lo"),
+        F.count(F.lit(1)).over(w_n).alias("n"),
+    )
+    picks = ranked.groupBy("segment").agg(
+        F.min("n").cast("bigint").alias("n"),
+        F.sum(
+            F.when(
+                F.col("rk_lo") == F.expr("CAST((n + 19) DIV 20 AS BIGINT)"),
+                F.col("r"),
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("p5"),
+        F.sum(
+            F.when(
+                F.col("rk_lo")
+                == F.expr("CAST((19 * (n + 1)) DIV 20 AS BIGINT)"),
+                F.col("r"),
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("p95"),
+    )
+    return picks.select(
+        "segment",
+        "n",
+        (F.col("p5").cast("double") / F.lit(1e9)).alias("p5_ret"),
+        (F.col("p95").cast("double") / F.lit(1e9)).alias("p95_ret"),
+        F.when(
+            F.col("p5") < 0,
+            F.col("p95").cast("double") / (-F.col("p5")).cast("double"),
+        ).alias("tail_ratio"),
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# fin_cagr_log — per-segment log-CAGR between first and last trading day
+
+
+@register(
+    "fin_cagr_log",
+    tags=("finance", "window"),
+    oracle="""
+        WITH daily AS (
+            SELECT c.c_mktsegment AS segment,
+                   CAST(o.o_orderdate AS DATE) AS d,
+                   CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
+                        AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+            GROUP BY 1, 2
+        ),
+        ends AS (
+            SELECT segment,
+                   CAST(arg_min(cents, d) AS BIGINT) AS start_cents,
+                   CAST(arg_max(cents, d) AS BIGINT) AS end_cents,
+                   CAST(date_diff('day', MIN(d), MAX(d)) AS BIGINT) AS days
+            FROM daily GROUP BY segment
+        )
+        SELECT segment, start_cents, end_cents, days,
+               CASE WHEN days > 0 THEN
+                 CAST(CAST(
+                   CAST(ln(CAST(end_cents AS DOUBLE)) AS DECIMAL(12,6))
+                   - CAST(ln(CAST(start_cents AS DOUBLE)) AS DECIMAL(12,6))
+                 AS VARCHAR) AS DOUBLE)
+                 * CAST('365.25' AS DOUBLE) / CAST(days AS DOUBLE)
+               END AS log_cagr
+        FROM ends ORDER BY segment
+    """,
+)
+def fin_cagr_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Annualized log-CAGR per market segment: ln(end/start) scaled by
+    365.25/days between the first and last trading day — the log-space
+    growth rate that sidesteps the exp() the arithmetic CAGR would
+    need (exp is libm-divergent cross-engine; ln quantizes exactly,
+    so the LOG rate is the twin-able canonical form, and exp of it is
+    a trivial presentation step for a consumer). Endpoints are
+    arg_min/arg_max picks on the unique per-segment date (min_by/
+    max_by — deterministic, no window needed); both lns quantize to
+    DECIMAL(12,6) on exact integer cents and subtract EXACTLY in
+    decimal; the one double expression is the annualization. Guarded
+    on the degenerate single-day segment. One keyed agg over
+    calendar-bounded dailies."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    daily = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_mktsegment").alias("segment"),
+            F.col("o_orderdate").cast("date").alias("d"),
+        )
+        .agg(
+            (
+                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+                .cast("decimal(18,2)")
+                * 100
+            )
+            .cast("bigint")
+            .alias("cents")
+        )
+    )
+    ends = daily.groupBy("segment").agg(
+        F.min_by("cents", "d").cast("bigint").alias("start_cents"),
+        F.max_by("cents", "d").cast("bigint").alias("end_cents"),
+        F.datediff(F.max("d"), F.min("d")).cast("bigint").alias("days"),
+    )
+    lnq = lambda col: F.log(F.col(col).cast("double")).cast("decimal(12,6)")  # noqa: E731
+    log_cagr = F.when(
+        F.col("days") > 0,
+        as_d(lnq("end_cents") - lnq("start_cents"))
+        * F.expr("CAST('365.25' AS DOUBLE)")
+        / F.col("days").cast("double"),
+    )
+    return ends.select(
+        "segment", "start_cents", "end_cents", "days", log_cagr.alias("log_cagr")
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# fin trio: Martin ratio, gain-to-pain, Jensen's alpha
+# (reuse the recipes.seg_daily spine + the q9 return / q6 drawdown
+# quantization recipes of fin_capm_beta / fin_ulcer_index)
+
+
+@register(
+    "fin_gain_to_pain",
+    tags=("finance", "risk"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {SEG_RET_SQL}
+        SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(r) AS BIGINT) AS sum_r_q9,
+               CAST(SUM(CASE WHEN r < 0 THEN -r ELSE 0 END) AS BIGINT)
+                   AS pain_q9,
+               CASE WHEN SUM(CASE WHEN r < 0 THEN -r ELSE 0 END) > 0 THEN
+                   CAST(SUM(r) AS DOUBLE)
+                   / CAST(SUM(CASE WHEN r < 0 THEN -r ELSE 0 END)
+                          AS DOUBLE) END AS gain_to_pain
+        FROM rs GROUP BY segment
+    """,
+)
+def fin_gain_to_pain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gain-to-pain ratio per market segment: sum of all daily returns
+    over the absolute sum of losing-day returns — Schwager's
+    consistency number (>1 means gains outweigh aggregate pain).
+    Exactness: returns are the shared q9 BIGINT spine, so both the
+    numerator and the pain denominator are exact integer sums and the
+    ratio is ONE guarded double division (identical pain > 0
+    predicate NULLs both engines on an all-up segment). Distributed
+    shape: one broadcast-join daily agg (corpus work) + per-segment
+    lag windows on calendar-bounded rows + one k-segment hash agg."""
+    rs = seg_returns(seg_daily(spark, sf_dir))
+    pain = F.sum(F.when(F.col("r") < 0, -F.col("r")).otherwise(0))
+    return rs.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("r").cast("bigint").alias("sum_r_q9"),
+        pain.cast("bigint").alias("pain_q9"),
+        F.when(
+            pain > 0, F.sum("r").cast("double") / pain.cast("double")
+        ).alias("gain_to_pain"),
+    )
+
+
+@register(
+    "fin_jensen_alpha",
+    tags=("finance", "stats"),
+    oracle=f"""
+        WITH {MARKET_MODEL_SQL}
+        SELECT segment, n,
+               CASE WHEN CAST(n AS DOUBLE) * smm
+                         - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) > 0 THEN
+                 ((CAST(sr AS DOUBLE) / CAST(n AS DOUBLE)
+                     / CAST(1e9 AS DOUBLE)
+                   - CAST('8.219178082191781e-05' AS DOUBLE))
+                  - (CAST(n AS DOUBLE) * srm
+                     - CAST(sr AS DOUBLE) * CAST(sm AS DOUBLE))
+                    / (CAST(n AS DOUBLE) * smm
+                       - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE))
+                    * (CAST(sm AS DOUBLE) / CAST(n AS DOUBLE)
+                         / CAST(1e9 AS DOUBLE)
+                       - CAST('8.219178082191781e-05' AS DOUBLE)))
+                 * CAST(365 AS DOUBLE)
+               END AS jensen_alpha_annual
+        FROM s ORDER BY segment
+    """,
+)
+def fin_jensen_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jensen's alpha per segment, annualized, against a 3%-annual
+    risk-free rate: alpha_J = (mean_r - rf) - beta * (mean_m - rf),
+    x365 — the excess-over-CAPM performance number (differs from
+    fin_capm_beta's regression intercept by pricing the risk-free
+    leg). Exactness: the five sufficient sums are the exact
+    integer/DECIMAL CAPM sums on the shared q9 spine; rf/365 enters
+    as a Python-generated double LITERAL shared verbatim by both
+    dialects (the fin_npv_rate_grid recipe — no division at query
+    time), and alpha assembles in one guarded double expression
+    (zero market variance NULLs both engines). Distributed shape
+    identical to fin_capm_beta: corpus work is the daily agg; all
+    windows on calendar-bounded rows; market series broadcast."""
+    rf_d = 0.03 / 365  # 8.219178082191781e-05, literal-twinned above
+    daily = seg_daily(spark, sf_dir).persist()
+    s = market_model_sums(daily)
+    n_d = F.col("n").cast("double")
+    sr_d = F.col("sr").cast("double")
+    sm_d = F.col("sm").cast("double")
+    var_m = n_d * F.col("smm") - sm_d * sm_d
+    beta = (n_d * F.col("srm") - sr_d * sm_d) / var_m
+    rf = F.lit(rf_d)
+    alpha = (
+        (sr_d / n_d / F.lit(1e9) - rf)
+        - beta * (sm_d / n_d / F.lit(1e9) - rf)
+    ) * F.lit(365).cast("double")
+    return s.select(
+        "segment",
+        "n",
+        F.when(var_m > 0, alpha).alias("jensen_alpha_annual"),
+    ).orderBy("segment")
+
+
+@register(
+    "fin_martin_ratio",
+    tags=("finance", "window", "risk"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        dd AS (
+            SELECT segment, d, x,
+                   {o_dd_q6('mx', 'x')} AS ddq
+            FROM (
+                SELECT segment, d, x,
+                       MAX(x) OVER (PARTITION BY segment ORDER BY d
+                                    ROWS UNBOUNDED PRECEDING) AS mx
+                FROM daily
+            )
+        ),
+        per AS (
+            SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_days,
+                   sqrt(CAST(CAST(SUM(CAST(ddq AS DECIMAL(19,0)) * ddq)
+                              AS VARCHAR) AS DOUBLE)
+                        / CAST(COUNT(*) AS DOUBLE)) / 1e6 AS ulcer,
+                   (CAST(CAST(arg_max(x, d) AS VARCHAR) AS DOUBLE)
+                      / CAST(CAST(arg_min(x, d) AS VARCHAR) AS DOUBLE)
+                    - CAST(1 AS DOUBLE)) * CAST(100 AS DOUBLE)
+                       AS total_ret_pct
+            FROM dd GROUP BY segment
+        )
+        SELECT segment, n_days, total_ret_pct, ulcer,
+               CASE WHEN ulcer > 0 THEN total_ret_pct / ulcer END
+                   AS martin_ratio
+        FROM per ORDER BY segment
+    """,
+)
+def fin_martin_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Martin ratio (Ulcer performance index) per segment: the period
+    total return over the ulcer index — return per unit of
+    depth-AND-duration drawdown pain, the risk-adjusted number that
+    punishes long slumps where Sharpe's volatility denominator
+    doesn't. Exactness: drawdowns are the fin_ulcer_index q6 BIGINT
+    recipe (quantize BEFORE squaring, exact DECIMAL square sums, one
+    sqrt edge); the period return takes first/last daily revenue via
+    arg_min/arg_max on the unique date key (Spark min_by/max_by twin
+    — deterministic, no order-dependent pick); the ratio is one
+    guarded double division (ulcer > 0 identical predicate — an
+    all-peak segment NULLs both engines). Distributed shape: the
+    fin_ulcer_index plan plus two arg-extremes in the same
+    per-segment agg — windows on calendar-bounded rows only."""
+    daily = seg_daily(spark, sf_dir)
+    w = Window.partitionBy("segment").orderBy("d").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    dd = daily.select(
+        "segment",
+        "d",
+        "x",
+        dd_q6(F.max("x").over(w), F.col("x"))
+        .alias("ddq"),
+    )
+    ulcer = (
+        F.sqrt(
+            as_d(
+                F.sum(F.col("ddq").cast("decimal(19,0)") * F.col("ddq"))
+                .cast("decimal(38,0)")
+            )
+            / F.count(F.lit(1)).cast("double")
+        )
+        / F.lit(1e6)
+    )
+    tot_ret = (
+        as_d(F.max_by("x", "d")) / as_d(F.min_by("x", "d"))
+        - F.lit(1).cast("double")
+    ) * F.lit(100).cast("double")
+    per = dd.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        ulcer.alias("ulcer"),
+        tot_ret.alias("total_ret_pct"),
+    )
+    return per.select(
+        "segment",
+        "n_days",
+        "total_ret_pct",
+        "ulcer",
+        F.when(F.col("ulcer") > 0, F.col("total_ret_pct") / F.col("ulcer"))
+        .alias("martin_ratio"),
     ).orderBy("segment")

@@ -15,9 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import as_d, dsum, o_dsum
+from finance_etl_spark.functions.money import as_d, dsum, o_dsum, o_ordered_fold_sum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.recipes import EVENT_DAILY_RN_SQL, event_daily_rn
+from finance_etl_spark.plans.recipes import (
+    EVENT_DAILY_RN_SQL,
+    SEG_DAILY_SQL,
+    event_daily_rn,
+    seg_daily,
+)
 from finance_etl_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1084,4 +1089,565 @@ def dq_join_fanout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("holds_n_to_1"),
         )
         .orderBy("relationship")
+    )
+
+
+@register(
+    "dq_sequential_gap_audit",
+    tags=("dq", "window", "agg"),
+    oracle="""
+        WITH keys AS (
+            SELECT DISTINCT o_orderkey AS k FROM orders
+        ),
+        bkt AS (
+            SELECT k, k // 4096 AS b FROM keys
+        ),
+        within AS (
+            SELECT b, k,
+                   k - LAG(k) OVER (PARTITION BY b ORDER BY k) AS gap
+            FROM bkt
+        ),
+        bstats AS (
+            SELECT b, CAST(MIN(k) AS BIGINT) AS bmin,
+                   CAST(MAX(k) AS BIGINT) AS bmax
+            FROM bkt GROUP BY b
+        ),
+        cross_gaps AS (
+            SELECT bmin - LAG(bmax) OVER (ORDER BY b) AS gap
+            FROM bstats
+        ),
+        allgaps AS (
+            SELECT gap FROM within WHERE gap IS NOT NULL
+            UNION ALL
+            SELECT gap FROM cross_gaps WHERE gap IS NOT NULL
+        ),
+        tot AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
+                   CAST(MIN(k) AS BIGINT) AS k_min,
+                   CAST(MAX(k) AS BIGINT) AS k_max
+            FROM keys
+        )
+        SELECT tot.n_keys, tot.k_min, tot.k_max,
+               CAST(tot.k_max - tot.k_min + 1 - tot.n_keys AS BIGINT)
+                   AS missing_keys,
+               CAST((SELECT MAX(gap) FROM allgaps) - 1 AS BIGINT)
+                   AS largest_run_missing,
+               CAST(tot.n_keys AS DOUBLE)
+                 / (tot.k_max - tot.k_min + 1) AS coverage
+        FROM tot
+    """,
+)
+def dq_sequential_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence-gap audit of the order-key space: how many keys are
+    missing between min and max, the longest missing RUN, and the
+    coverage ratio — the invoice-number completeness check every
+    audit asks for (a long missing run = a lost extract batch, not
+    TPC-H's by-design sparseness). The largest gap uses bucket+carry:
+    within-bucket LAG gaps on 4096-key buckets plus the O(buckets)
+    cross-boundary gaps from per-bucket min/max — no unpartitioned
+    corpus-scale window anywhere. All exact integers; coverage is one
+    edge division (k_max >= k_min by non-emptiness)."""
+    o = load_table(spark, sf_dir, "orders")
+    keys = o.select(F.col("o_orderkey").alias("k")).distinct()
+    bkt = keys.withColumn("b", F.floor(F.col("k") / F.lit(4096)))
+    w_in = Window.partitionBy("b").orderBy("k")
+    within = bkt.select(
+        (F.col("k") - F.lag("k").over(w_in)).alias("gap")
+    ).filter(F.col("gap").isNotNull())
+    bstats = bkt.groupBy("b").agg(
+        F.min("k").cast("bigint").alias("bmin"),
+        F.max("k").cast("bigint").alias("bmax"),
+    )
+    w_b = Window.orderBy("b")
+    cross_gaps = bstats.select(
+        (F.col("bmin") - F.lag("bmax").over(w_b)).alias("gap")
+    ).filter(F.col("gap").isNotNull())
+    allgaps = within.unionByName(cross_gaps)
+    maxgap = allgaps.agg(F.max("gap").alias("maxgap"))
+    tot = keys.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_keys"),
+        F.min("k").cast("bigint").alias("k_min"),
+        F.max("k").cast("bigint").alias("k_max"),
+    )
+    return tot.crossJoin(F.broadcast(maxgap)).select(
+        "n_keys",
+        "k_min",
+        "k_max",
+        (F.col("k_max") - F.col("k_min") + 1 - F.col("n_keys"))
+        .cast("bigint")
+        .alias("missing_keys"),
+        (F.col("maxgap") - 1).cast("bigint").alias("largest_run_missing"),
+        (
+            F.col("n_keys").cast("double")
+            / (F.col("k_max") - F.col("k_min") + 1)
+        ).alias("coverage"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# dq_tukey_fences — IQR outlier audit, exact order-statistic quartiles
+
+
+@register(
+    "dq_tukey_fences",
+    tags=("dq", "window", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        cents AS (
+            SELECT segment, d, CAST(x * 100 AS BIGINT) AS v FROM daily
+        ),
+        rn AS (
+            SELECT segment, v,
+                   ROW_NUMBER() OVER (PARTITION BY segment
+                                      ORDER BY v, d) AS r,
+                   COUNT(*) OVER (PARTITION BY segment) AS n_g
+            FROM cents
+        ),
+        q AS (
+            SELECT segment, CAST(n_g AS BIGINT) AS n_days,
+                   CAST(MIN(CASE WHEN r = (n_g + 3) // 4 THEN v END)
+                        AS BIGINT) AS q1,
+                   CAST(MIN(CASE WHEN r = (3 * n_g + 3) // 4 THEN v END)
+                        AS BIGINT) AS q3
+            FROM rn GROUP BY segment, n_g
+        )
+        SELECT q.segment, q.n_days, q.q1 AS q1_cents, q.q3 AS q3_cents,
+               q.q3 - q.q1 AS iqr_cents,
+               CAST(SUM(CASE WHEN 2 * c.v < 2 * q.q1 - 3 * (q.q3 - q.q1)
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
+               CAST(SUM(CASE WHEN 2 * c.v > 2 * q.q3 + 3 * (q.q3 - q.q1)
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_high
+        FROM q JOIN cents c ON c.segment = q.segment
+        GROUP BY q.segment, q.n_days, q.q1, q.q3
+        ORDER BY q.segment
+    """,
+)
+def dq_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tukey-fence outlier audit of each segment's daily revenue: days
+    outside [Q1 - 1.5*IQR, Q3 + 1.5*IQR]. Quartiles are PINNED exact
+    order statistics — Q1 = the ceil(n/4)-th smallest, Q3 = the
+    ceil(3n/4)-th smallest of the cents-integer values (no
+    interpolation, so no float and no engine-specific percentile
+    convention; the classical boxplot uses interpolated hinges, this
+    operator's convention is part of its declared contract). The
+    1.5*IQR fence comparison is doubled on both sides (2v vs 2Q1-3IQR)
+    to stay in integers. Per-segment rank windows ride the calendar-
+    bounded daily relation; the fence count is one broadcast join back
+    over the same bounded rows."""
+    daily = seg_daily(spark, sf_dir)
+    cents = daily.select(
+        "segment", "d", (F.col("x") * 100).cast("bigint").alias("v")
+    )
+    wseg = Window.partitionBy("segment")
+    rn = cents.select(
+        "segment",
+        "v",
+        F.row_number().over(wseg.orderBy("v", "d")).alias("r"),
+        F.count(F.lit(1)).over(wseg).alias("n_g"),
+    )
+    q = rn.groupBy("segment", "n_g").agg(
+        F.min(
+            F.when(F.col("r") == F.floor((F.col("n_g") + 3) / 4), F.col("v"))
+        )
+        .cast("bigint")
+        .alias("q1"),
+        F.min(
+            F.when(
+                F.col("r") == F.floor((3 * F.col("n_g") + 3) / 4), F.col("v")
+            )
+        )
+        .cast("bigint")
+        .alias("q3"),
+    )
+    iqr = F.col("q3") - F.col("q1")
+    return (
+        cents.join(F.broadcast(q), "segment")
+        .groupBy("segment", "n_g", "q1", "q3")
+        .agg(
+            F.sum(
+                F.when(2 * F.col("v") < 2 * F.col("q1") - 3 * iqr, 1).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_low"),
+            F.sum(
+                F.when(2 * F.col("v") > 2 * F.col("q3") + 3 * iqr, 1).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_high"),
+        )
+        .select(
+            "segment",
+            F.col("n_g").cast("bigint").alias("n_days"),
+            F.col("q1").alias("q1_cents"),
+            F.col("q3").alias("q3_cents"),
+            iqr.alias("iqr_cents"),
+            "n_low",
+            "n_high",
+        )
+        .orderBy("segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# dq_srm_check — sample-ratio-mismatch chi-square over a deterministic
+# 4-arm assignment
+
+
+@register(
+    "dq_srm_check",
+    tags=("dq", "stats"),
+    oracle="""
+        WITH arms AS MATERIALIZED (
+            SELECT CAST(CAST('0x' || substr(md5('srm0#'
+                       || CAST(c_custkey AS VARCHAR)), 1, 15) AS BIGINT)
+                       % 4 AS INT) AS arm,
+                   CAST(COUNT(*) AS BIGINT) AS n_arm
+            FROM customer
+            GROUP BY 1
+        ),
+        tot AS (SELECT CAST(SUM(n_arm) AS BIGINT) AS n FROM arms),
+        devs AS (
+            SELECT arm, n_arm, n,
+                   (4 * n_arm - n) * (4 * n_arm - n) AS dev_num
+            FROM arms CROSS JOIN tot
+        )
+        SELECT arm, n_arm, n,
+               CAST(dev_num AS BIGINT) AS dev_num,
+               CAST(CAST(SUM(dev_num) OVER () AS BIGINT) AS DOUBLE)
+                 / (CAST(4 AS DOUBLE) * CAST(n AS DOUBLE)) AS chi2,
+               (CAST(CAST(SUM(dev_num) OVER () AS BIGINT) AS DOUBLE)
+                 / (CAST(4 AS DOUBLE) * CAST(n AS DOUBLE))
+                > CAST('16.266' AS DOUBLE)) AS srm_flag
+        FROM devs
+    """,
+)
+def dq_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sample-ratio-mismatch check — the first A/B-test sanity gate:
+    customers deterministically hashed into 4 equal-expected arms (the
+    house raw 60-bit md5 uniform, salt 'srm0#'), then the chi-square
+    against the 1:1:1:1 design: chi2 = sum (4*O_i - n)^2 / (4n), with
+    every squared deviation an exact BIGINT and ONE presentation
+    division; the flag compares against the df=3, p=0.001 critical
+    value 16.266 as a string-routed constant (an SRM at p<0.001 means
+    the assignment or logging pipeline is broken — Kohavi's rule).
+    Distributed shape: one hash agg over the assignment expression
+    (map-side combining, 4-row state), then scalar arithmetic."""
+    c = load_table(spark, sf_dir, "customer")
+    arm = (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit("srm0#"), F.col("c_custkey").cast("string"))),
+                1,
+                15,
+            ),
+            16,
+            10,
+        )
+        .cast("bigint")
+        % 4
+    ).cast("int")
+    arms = c.groupBy(arm.alias("arm")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_arm")
+    )
+    tot = arms.agg(F.sum("n_arm").cast("bigint").alias("n"))
+    devs = arms.crossJoin(F.broadcast(tot)).select(
+        "arm",
+        "n_arm",
+        "n",
+        (
+            (F.lit(4) * F.col("n_arm") - F.col("n"))
+            * (F.lit(4) * F.col("n_arm") - F.col("n"))
+        )
+        .cast("bigint")
+        .alias("dev_num"),
+    )
+    chi2 = (
+        F.sum("dev_num").over(Window.partitionBy()).cast("bigint").cast("double")
+        / (F.lit(4).cast("double") * F.col("n").cast("double"))
+    )
+    return devs.select(
+        "arm",
+        "n_arm",
+        "n",
+        "dev_num",
+        chi2.alias("chi2"),
+        (chi2 > F.expr("CAST('16.266' AS DOUBLE)")).alias("srm_flag"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# dq_functional_dependency — FD violation profile for declared candidates
+
+
+@register(
+    "dq_functional_dependency",
+    tags=("dq", "agg"),
+    oracle="""
+        WITH fd1 AS (
+            SELECT 'orders: o_custkey -> o_orderpriority' AS fd,
+                   CAST(COUNT(*) AS BIGINT) AS n_lhs,
+                   CAST(SUM(n_x) AS BIGINT) AS n_rows,
+                   CAST(SUM(n_x - max_xy) AS BIGINT) AS violations
+            FROM (SELECT CAST(SUM(nxy) AS BIGINT) AS n_x,
+                         CAST(MAX(nxy) AS BIGINT) AS max_xy
+                  FROM (SELECT o_custkey, o_orderpriority,
+                               CAST(COUNT(*) AS BIGINT) AS nxy
+                        FROM orders GROUP BY 1, 2)
+                  GROUP BY o_custkey)
+        ),
+        fd2 AS (
+            SELECT 'lineitem: l_partkey -> l_returnflag' AS fd,
+                   CAST(COUNT(*) AS BIGINT) AS n_lhs,
+                   CAST(SUM(n_x) AS BIGINT) AS n_rows,
+                   CAST(SUM(n_x - max_xy) AS BIGINT) AS violations
+            FROM (SELECT CAST(SUM(nxy) AS BIGINT) AS n_x,
+                         CAST(MAX(nxy) AS BIGINT) AS max_xy
+                  FROM (SELECT l_partkey, l_returnflag,
+                               CAST(COUNT(*) AS BIGINT) AS nxy
+                        FROM lineitem GROUP BY 1, 2)
+                  GROUP BY l_partkey)
+        ),
+        fd3 AS (
+            SELECT 'documents: doc_id -> lang' AS fd,
+                   CAST(COUNT(*) AS BIGINT) AS n_lhs,
+                   CAST(SUM(n_x) AS BIGINT) AS n_rows,
+                   CAST(SUM(n_x - max_xy) AS BIGINT) AS violations
+            FROM (SELECT CAST(SUM(nxy) AS BIGINT) AS n_x,
+                         CAST(MAX(nxy) AS BIGINT) AS max_xy
+                  FROM (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS nxy
+                        FROM documents GROUP BY 1, 2)
+                  GROUP BY doc_id)
+        )
+        SELECT fd, n_lhs, n_rows, violations, (violations = 0) AS holds
+        FROM (SELECT * FROM fd1 UNION ALL SELECT * FROM fd2
+              UNION ALL SELECT * FROM fd3)
+    """,
+)
+def dq_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Functional-dependency audit for three declared candidates
+    (X -> Y holds iff every X value maps to ONE Y value): per
+    candidate, violations = sum over X of (n_x - max_y n_xy) — the
+    minimum number of rows that must change for the FD to hold (the
+    standard g3-style error measure). One holds (doc_id -> lang, a
+    key FD), two measurably fail — a lake runs exactly this to
+    discover which "natural keys" are trustworthy before modeling.
+    All exact integers. Distributed shape per candidate: one (X, Y)
+    count agg (map-side combining) then an X-keyed max/sum — two
+    shuffles on the X key, state bounded by |distinct X|; the three
+    audits union into one 3-row report."""
+
+    def fd(df: DataFrame, x: str, y: str, name: str) -> DataFrame:
+        per_x = (
+            df.groupBy(x, y)
+            .agg(F.count(F.lit(1)).cast("bigint").alias("nxy"))
+            .groupBy(x)
+            .agg(
+                F.sum("nxy").cast("bigint").alias("n_x"),
+                F.max("nxy").cast("bigint").alias("max_xy"),
+            )
+        )
+        return per_x.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_lhs"),
+            F.sum("n_x").cast("bigint").alias("n_rows"),
+            F.sum(F.col("n_x") - F.col("max_xy"))
+            .cast("bigint")
+            .alias("violations"),
+        ).select(F.lit(name).alias("fd"), "n_lhs", "n_rows", "violations")
+
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    d = load_table(spark, sf_dir, "documents")
+    rows = (
+        fd(o, "o_custkey", "o_orderpriority", "orders: o_custkey -> o_orderpriority")
+        .unionByName(
+            fd(li, "l_partkey", "l_returnflag", "lineitem: l_partkey -> l_returnflag")
+        )
+        .unionByName(fd(d, "doc_id", "lang", "documents: doc_id -> lang"))
+    )
+    return rows.select(
+        "fd", "n_lhs", "n_rows", "violations", (F.col("violations") == 0).alias("holds")
+    )
+
+
+# ---------------------------------------------------------------------------
+# dq_monotonicity_audit — per-user event-time ordering audit
+
+
+@register(
+    "dq_monotonicity_audit",
+    tags=("dq", "window"),
+    oracle="""
+        WITH seq AS (
+            SELECT event_type, ts,
+                   LAG(ts) OVER (PARTITION BY user_id ORDER BY event_id)
+                       AS prev_ts
+            FROM events
+        )
+        SELECT event_type,
+               CAST(COUNT(*) AS BIGINT) AS n_events,
+               CAST(SUM(CASE WHEN prev_ts IS NOT NULL THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_pairs,
+               CAST(SUM(CASE WHEN ts < prev_ts THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_violations,
+               CASE WHEN SUM(CASE WHEN prev_ts IS NOT NULL THEN 1 ELSE 0 END)
+                         > 0 THEN
+                 CAST(SUM(CASE WHEN ts < prev_ts THEN 1 ELSE 0 END) AS DOUBLE)
+                   / CAST(SUM(CASE WHEN prev_ts IS NOT NULL THEN 1 ELSE 0 END)
+                          AS DOUBLE)
+               END AS violation_rate
+        FROM seq GROUP BY event_type
+    """,
+)
+def dq_monotonicity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event-time monotonicity audit: within each user's event stream
+    (ordered by event_id — the ingestion sequence), count adjacent
+    pairs whose timestamp goes BACKWARD, reported per event type of
+    the later event — the first check run on any event log before
+    trusting sessionization, funnels, or watermarked streaming (a
+    non-zero rate means the producer's clock or the ingestion order is
+    broken, and every downstream as-of join inherits it). Exact
+    integer counts off one user-partitioned lag window; the rate is a
+    guarded division. Distributed shape: the window partitions by
+    user_id (millions of small partitions at scale — the healthy
+    shape), then one event_type hash agg."""
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("event_id")
+    seq = e.select(
+        "event_type", "ts", F.lag("ts").over(w).alias("prev_ts")
+    )
+    has_prev = F.sum(
+        F.when(F.col("prev_ts").isNotNull(), 1).otherwise(0)
+    ).cast("bigint")
+    viol = F.sum(
+        F.when(F.col("ts") < F.col("prev_ts"), 1).otherwise(0)
+    ).cast("bigint")
+    return seq.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        has_prev.alias("n_pairs"),
+        viol.alias("n_violations"),
+        F.when(
+            has_prev > 0, viol.cast("double") / has_prev.cast("double")
+        ).alias("violation_rate"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# dq_benford_second_digit — second-digit Benford audit with chi-square
+
+_BEN2 = {
+    0: "0.11967926859688073",
+    1: "0.1138901034075564",
+    2: "0.10882149900550823",
+    3: "0.10432956023095939",
+    4: "0.10030820226757937",
+    5: "0.09667723580232243",
+    6: "0.09337473578303615",
+    7: "0.09035198926960332",
+    8: "0.08757005357886138",
+    9: "0.08499735205769224",
+}
+
+
+_BEN2_SQL_CASE = " ".join(
+    f"WHEN d2 = '{d}' THEN CAST('{p}' AS DOUBLE)" for d, p in _BEN2.items()
+)
+
+
+@register(
+    "dq_benford_second_digit",
+    tags=("curation", "quality", "stats"),
+    oracle=f"""
+        WITH digits AS (
+            SELECT substr(regexp_replace(
+                       CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR),
+                       '[^0-9]', '', 'g'), 2, 1) AS d2
+            FROM orders
+            WHERE o_totalprice >= 10
+        ),
+        obs AS (
+            SELECT d2, CAST(COUNT(*) AS BIGINT) AS n
+            FROM digits GROUP BY d2
+        ),
+        tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nt FROM obs),
+        terms AS (
+            SELECT d2, n, nt,
+                   CASE {_BEN2_SQL_CASE} END AS p_exp,
+                   (CAST(n AS DOUBLE)
+                      - CAST(nt AS DOUBLE) * (CASE {_BEN2_SQL_CASE} END))
+                   * (CAST(n AS DOUBLE)
+                      - CAST(nt AS DOUBLE) * (CASE {_BEN2_SQL_CASE} END))
+                   / (CAST(nt AS DOUBLE) * (CASE {_BEN2_SQL_CASE} END)) AS t
+            FROM obs CROSS JOIN tot
+        ),
+        chi AS (
+            SELECT {o_ordered_fold_sum('d2', 't')}
+                       AS chi2
+            FROM terms
+        )
+        SELECT tm.d2 AS second_digit, tm.n,
+               CAST(tm.n AS DOUBLE) / CAST(tm.nt AS DOUBLE)
+                   AS observed_frac,
+               tm.p_exp AS benford_frac, c.chi2
+        FROM terms tm CROSS JOIN chi c
+    """,
+)
+def dq_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benford SECOND-digit audit over order amounts — the forensic
+    follow-up to dq_benford_digits (fabricators who fake a plausible
+    leading digit rarely fake the second; auditors test both): the
+    second significant digit's distribution vs the Benford-2 law
+    P(d) = sum_k log10(1 + 1/(10k+d)), with the chi-square
+    goodness-of-fit that the first-digit query deliberately left out.
+    The expected probabilities are Python-generated double LITERALS
+    shared verbatim by both dialects (the fin_npv_rate_grid recipe —
+    no log10 at query time); the digit comes from the DECIMAL
+    canonical string with non-digits stripped (no scientific
+    notation, no libm); counts are exact BIGINTs; each chi-square
+    term is one shared double expression and the 10-term fold runs
+    in digit order. One scan, 10-row state."""
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice") >= 10
+    )
+    digits = o.select(
+        F.substring(
+            F.regexp_replace(
+                F.col("o_totalprice").cast("decimal(18,2)").cast("string"),
+                "[^0-9]",
+                "",
+            ),
+            2,
+            1,
+        ).alias("d2")
+    )
+    obs = digits.groupBy("d2").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    tot = obs.agg(F.sum("n").cast("bigint").alias("nt"))
+    p_exp = F.when(
+        F.col("d2") == "0", F.expr(f"CAST('{_BEN2[0]}' AS DOUBLE)")
+    )
+    for d in range(1, 10):
+        p_exp = p_exp.when(
+            F.col("d2") == str(d), F.expr(f"CAST('{_BEN2[d]}' AS DOUBLE)")
+        )
+    e = F.col("nt").cast("double") * p_exp
+    t = (F.col("n").cast("double") - e) * (F.col("n").cast("double") - e) / e
+    terms = obs.crossJoin(F.broadcast(tot)).select(
+        "d2", "n", "nt", p_exp.alias("p_exp"), t.alias("t")
+    )
+    chi = terms.agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("t")))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["t"],
+        ).alias("chi2")
+    )
+    return terms.crossJoin(F.broadcast(chi)).select(
+        F.col("d2").alias("second_digit"),
+        "n",
+        (F.col("n").cast("double") / F.col("nt").cast("double")).alias(
+            "observed_frac"
+        ),
+        F.col("p_exp").alias("benford_frac"),
+        "chi2",
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import (
@@ -39,9 +39,11 @@ from finance_etl_spark.functions.money import (
     o_fsum,
     o_ordered_fold_sum,
     o_qsum,
+    ordered_fold_sum,
     qsum,
 )
-from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.io.readers import load_table, load_table_parallel
+from finance_etl_spark.plans.recipes import ORDER_PRIORITIES, SPACE, pois_case_sql
 from finance_etl_spark.plans.registry import register
 
 _DIM = 64  # embeddings.embedding is ArrayType(float), 64-dim
@@ -194,7 +196,6 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multinomial naive Bayes over documents (class = lang)
 
 _NB_PROBES = ("table", "row", "value", "spark", "query")
-_SPACE = " "
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,7 +204,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.explode(
-            F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+            F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
         ).alias("tok"),
     )
 
@@ -958,11 +959,6 @@ def ml_kfold_ols_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OH_PRIORITIES = (
-    "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW",
-)
-
-
 @register(
     "ml_one_hot_encode",
     tags=("ml", "features", "scalar"),
@@ -971,7 +967,7 @@ _OH_PRIORITIES = (
                o_orderpriority,
                {", ".join(
                    f"CAST(o_orderpriority = '{p}' AS INT) AS is_p{i + 1}"
-                   for i, p in enumerate(_OH_PRIORITIES)
+                   for i, p in enumerate(ORDER_PRIORITIES)
                )}
         FROM orders
     """,
@@ -989,7 +985,7 @@ def ml_one_hot_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         *[
             (F.col("o_orderpriority") == p).cast("int").alias(f"is_p{i + 1}")
-            for i, p in enumerate(_OH_PRIORITIES)
+            for i, p in enumerate(ORDER_PRIORITIES)
         ],
     )
 
@@ -1757,7 +1753,7 @@ def ml_chi2_feature_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             F.explode(
-                F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+                F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
             ).alias("tok"),
         )
         .distinct()
@@ -5088,14 +5084,6 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BAG_B = 16
-_BAG_POIS = (24109, 48218, 60273, 64291, 65296, 65497, 65530, 65535)
-
-
-def _bag_pois_sql(u: str) -> str:
-    arms = " ".join(
-        f"WHEN {u} < {t} THEN {k}" for k, t in enumerate(_BAG_POIS)
-    )
-    return f"CASE {arms} ELSE {len(_BAG_POIS)} END"
 
 
 def _bagging_oracle(u_sql: str) -> str:
@@ -5122,7 +5110,7 @@ def _bagging_oracle(u_sql: str) -> str:
         ),
         rep AS (
             SELECT b.k, b.bin, b.y, b.cnt, r.b,
-                   {_bag_pois_sql(u_sql)} AS w
+                   {pois_case_sql(u_sql)} AS w
             FROM base b
             CROSS JOIN (SELECT UNNEST(range({_BAG_B})) AS b) r
         ),
@@ -5232,7 +5220,7 @@ def ml_bagging_oob(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(conv(substring(md5(concat(k, '#{b}')), 1, 4), 16, 10)"
             " AS BIGINT)"
         )
-        return _bag_pois_sql(u)
+        return pois_case_sql(u)
 
     return _bagging_pipeline(spark, sf_dir, _w_sql)
 
@@ -5557,7 +5545,7 @@ def ml_bagging_oob_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(conv(substring(md5(concat(k, '#{b // 8}')),"
             f" {1 + 4 * (b % 8)}, 4), 16, 10) AS BIGINT)"
         )
-        return _bag_pois_sql(u)
+        return pois_case_sql(u)
 
     return _bagging_pipeline(spark, sf_dir, _w_sql)
 
@@ -7107,3 +7095,1966 @@ def ml_precision_at_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+
+
+# ML-eval queries: score = l_quantity, label = l_returnflag 'R' (the
+# family convention of ml_roc_auc / ml_threshold_sweep)
+
+
+@register(
+    "ml_score_ks",
+    tags=("ml", "eval", "window"),
+    oracle="""
+        WITH grp AS (
+            SELECT l_quantity AS score,
+                   CAST(COUNT(*) FILTER (WHERE l_returnflag = 'R')
+                        AS BIGINT) AS pos,
+                   CAST(COUNT(*) FILTER (WHERE l_returnflag <> 'R')
+                        AS BIGINT) AS neg
+            FROM lineitem GROUP BY l_quantity
+        ),
+        cum AS (
+            SELECT score,
+                   SUM(pos) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
+                       AS cpos,
+                   SUM(neg) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING)
+                       AS cneg
+            FROM grp
+        ),
+        tot AS (
+            SELECT CAST(SUM(pos) AS BIGINT) AS npos,
+                   CAST(SUM(neg) AS BIGINT) AS nneg
+            FROM grp
+        ),
+        gaps AS (
+            SELECT score,
+                   CAST(ABS(cpos * tot.nneg - cneg * tot.npos) AS BIGINT)
+                       AS gap
+            FROM cum CROSS JOIN tot
+        ),
+        best AS (
+            SELECT score, gap,
+                   ROW_NUMBER() OVER (ORDER BY gap DESC, score) AS pk
+            FROM gaps
+        )
+        SELECT tot.npos, tot.nneg,
+               CAST(best.gap AS DOUBLE)
+                 / (CAST(tot.npos AS DOUBLE) * tot.nneg) AS ks_stat,
+               best.score AS ks_threshold
+        FROM best CROSS JOIN tot WHERE best.pk = 1
+    """,
+)
+def ml_score_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KS separation of the model score between classes — credit
+    scoring's favorite single number: D = max over thresholds of
+    |F_pos(s) - F_neg(s)|, with the argmax threshold (the score cut a
+    rule-based policy would deploy). The gap is the exact integer
+    |cpos*nneg - cneg*npos| on the value-domain-bounded distinct-score
+    relation (l_quantity has <= 50 distinct values at any SF, so the
+    unpartitioned cumulative window rides a bounded relation — the
+    bucket+carry exemption documented in session.py); division by
+    npos*nneg happens once at the edge. Deterministic earliest-score
+    argmax tiebreak. Class balance is a fixture invariant (both
+    classes populated at every SF)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    grp = li.groupBy(F.col("l_quantity").alias("score")).agg(
+        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
+        .cast("bigint")
+        .alias("pos"),
+        F.sum(F.when(F.col("l_returnflag") != "R", 1).otherwise(0))
+        .cast("bigint")
+        .alias("neg"),
+    )
+    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)
+    cum = grp.select(
+        "score",
+        F.sum("pos").over(w).alias("cpos"),
+        F.sum("neg").over(w).alias("cneg"),
+    )
+    tot = grp.agg(
+        F.sum("pos").cast("bigint").alias("npos"),
+        F.sum("neg").cast("bigint").alias("nneg"),
+    )
+    gaps = cum.crossJoin(F.broadcast(tot)).select(
+        "score",
+        F.abs(F.col("cpos") * F.col("nneg") - F.col("cneg") * F.col("npos"))
+        .cast("bigint")
+        .alias("gap"),
+        "npos",
+        "nneg",
+    )
+    wbest = Window.orderBy(F.col("gap").desc(), "score")
+    return (
+        gaps.withColumn("pk", F.row_number().over(wbest))
+        .filter(F.col("pk") == 1)
+        .select(
+            "npos",
+            "nneg",
+            (
+                F.col("gap").cast("double")
+                / (F.col("npos").cast("double") * F.col("nneg"))
+            ).alias("ks_stat"),
+            F.col("score").alias("ks_threshold"),
+        )
+    )
+
+
+@register(
+    "ml_somers_d",
+    tags=("ml", "eval", "window"),
+    oracle="""
+        WITH grp AS (
+            SELECT l_quantity AS score,
+                   CAST(COUNT(*) FILTER (WHERE l_returnflag = 'R')
+                        AS BIGINT) AS pos,
+                   CAST(COUNT(*) FILTER (WHERE l_returnflag <> 'R')
+                        AS BIGINT) AS neg
+            FROM lineitem GROUP BY l_quantity
+        ),
+        cum AS (
+            SELECT score, pos, neg,
+                   CAST(COALESCE(SUM(neg) OVER (ORDER BY score
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                        AS BIGINT) AS neg_below,
+                   CAST(COALESCE(SUM(pos) OVER (ORDER BY score
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                        AS BIGINT) AS pos_below
+            FROM grp
+        ),
+        tot AS (
+            SELECT CAST(SUM(pos) AS BIGINT) AS npos,
+                   CAST(SUM(neg) AS BIGINT) AS nneg
+            FROM grp
+        ),
+        pairs AS (
+            SELECT CAST(SUM(CAST(pos AS DECIMAL(38,0)) * neg_below)
+                        AS DECIMAL(38,0)) AS concordant,
+                   CAST(SUM(CAST(pos AS DECIMAL(38,0))
+                            * (tot.nneg - neg_below - neg))
+                        AS DECIMAL(38,0)) AS discordant,
+                   CAST(SUM(CAST(pos AS DECIMAL(38,0)) * neg)
+                        AS DECIMAL(38,0)) AS tied_score
+            FROM cum CROSS JOIN tot
+        )
+        SELECT tot.npos, tot.nneg,
+               CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
+                   AS n_concordant,
+               CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE)
+                   AS n_discordant,
+               CAST(CAST(pairs.tied_score AS VARCHAR) AS DOUBLE) AS n_tied,
+               (CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
+                - CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE))
+                 / (CAST(tot.npos AS DOUBLE) * tot.nneg) AS somers_d,
+               CASE WHEN CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
+                         + CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE)
+                         > 0 THEN
+                 (CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
+                  - CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE))
+                 / (CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
+                    + CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE))
+               END AS gk_gamma
+        FROM pairs CROSS JOIN tot
+    """,
+)
+def ml_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Somers' D (and Goodman-Kruskal gamma) of score vs binary label
+    — the pair-concordance view of discrimination: D = (C - D') /
+    (npos*nneg) = 2*AUC - 1, but reported WITH the raw concordant /
+    discordant / score-tied pair censuses that model-risk reviews ask
+    for (gamma excludes ties, D charges them). All three pair counts
+    are exact DECIMAL(38,0) sums over the <= 50-value distinct-score
+    relation (pos_v * negatives-below etc., cumulative window on a
+    value-domain-bounded relation); npos*nneg ~ 1e11 at sf1 so counts
+    are decimal38, VARCHAR-routed to double for presentation. gamma
+    NULLs if every pair is score-tied (degenerate single-score
+    fixture — impossible here, guarded anyway)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    grp = li.groupBy(F.col("l_quantity").alias("score")).agg(
+        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
+        .cast("bigint")
+        .alias("pos"),
+        F.sum(F.when(F.col("l_returnflag") != "R", 1).otherwise(0))
+        .cast("bigint")
+        .alias("neg"),
+    )
+    w_prev = Window.orderBy("score").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    cum = grp.select(
+        "pos",
+        "neg",
+        F.coalesce(F.sum("neg").over(w_prev), F.lit(0)).alias("neg_below"),
+    )
+    tot = grp.agg(
+        F.sum("pos").cast("bigint").alias("npos"),
+        F.sum("neg").cast("bigint").alias("nneg"),
+    )
+    posD = F.col("pos").cast("decimal(38,0)")
+    pairs = cum.crossJoin(F.broadcast(tot)).agg(
+        F.sum(posD * F.col("neg_below")).cast("decimal(38,0)").alias(
+            "concordant"
+        ),
+        F.sum(posD * (F.col("nneg") - F.col("neg_below") - F.col("neg")))
+        .cast("decimal(38,0)")
+        .alias("discordant"),
+        F.sum(posD * F.col("neg")).cast("decimal(38,0)").alias("tied_score"),
+    )
+    c_d = as_d(F.col("concordant"))
+    d_d = as_d(F.col("discordant"))
+    t_d = as_d(F.col("tied_score"))
+    return pairs.crossJoin(F.broadcast(tot)).select(
+        "npos",
+        "nneg",
+        c_d.alias("n_concordant"),
+        d_d.alias("n_discordant"),
+        t_d.alias("n_tied"),
+        ((c_d - d_d) / (F.col("npos").cast("double") * F.col("nneg"))).alias(
+            "somers_d"
+        ),
+        F.when(c_d + d_d > 0, (c_d - d_d) / (c_d + d_d)).alias("gk_gamma"),
+    )
+
+
+@register(
+    "ml_hosmer_lemeshow",
+    tags=("ml", "eval", "agg"),
+    oracle=f"""
+        WITH scored AS (
+            SELECT CAST(LEAST(9, FLOOR((l_quantity - 1) / 5)) AS BIGINT)
+                       AS bin,
+                   l_quantity / 51.0 AS p,
+                   CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
+            FROM lineitem
+        ),
+        bins AS (
+            SELECT bin,
+                   CAST(COUNT(*) AS BIGINT) AS n_g,
+                   CAST(SUM(y) AS BIGINT) AS o1,
+                   {o_fsum('p', 9)} AS e1
+            FROM scored GROUP BY bin
+        )
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_bins,
+               CAST(SUM(n_g) AS BIGINT) AS n,
+               {o_ordered_fold_sum(
+                   'bin',
+                   '(CAST(o1 AS DOUBLE) - e1) * (CAST(o1 AS DOUBLE) - e1) / (e1 * (1 -'
+                   ' e1 / n_g))',
+               )} AS hl_stat,
+               CAST(COUNT(*) - 2 AS BIGINT) AS df
+        FROM bins
+    """,
+)
+def ml_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hosmer-Lemeshow goodness-of-fit for the family's deterministic
+    probability model p = quantity/51 against the observed return
+    flag, over 10 fixed score bins: HL = sum_g (O_g - E_g)^2 /
+    (E_g (1 - E_g/n_g)) — the calibration CHI-SQUARE that complements
+    ml_calibration_bins (per-bin table) and ml_calibration_ece
+    (weighted gap) with an actual test statistic, df = bins - 2.
+    Expected counts sum the per-row p through the floor-1e9 exact
+    reduction (engine-order-free); observed counts are exact ints;
+    the 10 bin terms fold in PINNED bin order. Fixed-width quantity
+    bins (not quantile bins) keep the binning engine-exact. E_g in
+    (0, n_g) by construction of p (quantity 1..50 over 51), so the
+    denominator never degenerates."""
+    li = load_table(spark, sf_dir, "lineitem")
+    scored = li.select(
+        F.least(F.lit(9), F.floor((F.col("l_quantity") - 1) / 5))
+        .cast("bigint")
+        .alias("bin"),
+        (F.col("l_quantity") / F.lit(51.0)).alias("p"),
+        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
+    )
+    bins = scored.groupBy("bin").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_g"),
+        F.sum("y").cast("bigint").alias("o1"),
+        (
+            as_d(
+                F.sum(
+                    F.floor(F.col("p") * F.lit(1e9)).cast("decimal(38,0)")
+                ).cast("decimal(38,0)")
+            )
+            / F.lit(1e9)
+        ).alias("e1"),
+    )
+    term = (F.col("o1").cast("double") - F.col("e1")) * (
+        F.col("o1").cast("double") - F.col("e1")
+    ) / (F.col("e1") * (1 - F.col("e1") / F.col("n_g")))
+    return bins.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_bins"),
+        F.sum("n_g").cast("bigint").alias("n"),
+        ordered_fold_sum(F.col("bin"), term).alias("hl_stat"),
+        (F.count(F.lit(1)) - 2).cast("bigint").alias("df"),
+    )
+
+
+@register(
+    "ml_mcc_multiclass",
+    tags=("ml", "eval", "agg"),
+    oracle="""
+        WITH labeled AS (
+            SELECT l_returnflag AS truth,
+                   CASE WHEN l_quantity < 17 THEN 'A'
+                        WHEN l_quantity < 34 THEN 'N'
+                        ELSE 'R' END AS pred
+            FROM lineitem
+        ),
+        cells AS (
+            SELECT truth, pred, CAST(COUNT(*) AS BIGINT) AS n
+            FROM labeled GROUP BY truth, pred
+        ),
+        t AS (SELECT truth AS k, CAST(SUM(n) AS BIGINT) AS tk
+              FROM cells GROUP BY truth),
+        p AS (SELECT pred AS k, CAST(SUM(n) AS BIGINT) AS pk
+              FROM cells GROUP BY pred),
+        marg AS (
+            SELECT COALESCE(t.k, p.k) AS k,
+                   COALESCE(t.tk, 0) AS tk,
+                   COALESCE(p.pk, 0) AS pk
+            FROM t FULL OUTER JOIN p ON p.k = t.k
+        ),
+        m AS (
+            SELECT CAST(SUM(CAST(tk AS DECIMAL(38,0)) * pk)
+                        AS DECIMAL(38,0)) AS sum_tp,
+                   CAST(SUM(CAST(tk AS DECIMAL(38,0)) * tk)
+                        AS DECIMAL(38,0)) AS sum_t2,
+                   CAST(SUM(CAST(pk AS DECIMAL(38,0)) * pk)
+                        AS DECIMAL(38,0)) AS sum_p2
+            FROM marg
+        ),
+        tot AS (
+            SELECT CAST(SUM(n) AS BIGINT) AS s,
+                   CAST(SUM(CASE WHEN truth = pred THEN n ELSE 0 END)
+                        AS BIGINT) AS c
+            FROM cells
+        )
+        SELECT tot.s AS n, tot.c AS n_correct,
+               CAST(tot.c AS DOUBLE) / tot.s AS accuracy,
+               CASE WHEN (CAST(tot.s AS DOUBLE) * tot.s
+                          - CAST(CAST(m.sum_t2 AS VARCHAR) AS DOUBLE)) > 0
+                         AND (CAST(tot.s AS DOUBLE) * tot.s
+                              - CAST(CAST(m.sum_p2 AS VARCHAR) AS DOUBLE)) > 0
+               THEN
+                 (CAST(tot.c AS DOUBLE) * tot.s
+                  - CAST(CAST(m.sum_tp AS VARCHAR) AS DOUBLE))
+                 / sqrt((CAST(tot.s AS DOUBLE) * tot.s
+                         - CAST(CAST(m.sum_t2 AS VARCHAR) AS DOUBLE))
+                        * (CAST(tot.s AS DOUBLE) * tot.s
+                           - CAST(CAST(m.sum_p2 AS VARCHAR) AS DOUBLE)))
+               END AS mcc
+        FROM tot CROSS JOIN m
+    """,
+)
+def ml_mcc_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multiclass Matthews correlation (Gorodkin's R_K) of a fixed
+    quantity-threshold classifier against the 3-class return flag:
+    R_K = (c*s - sum_k t_k p_k) / sqrt((s^2 - sum t_k^2)(s^2 - sum
+    p_k^2)) — the chance-corrected accuracy that stays honest under
+    class imbalance, generalizing ml_mcc_binary to the full confusion
+    matrix. Marginals live on the <= 3-row class relation (full outer
+    join of truth/pred counts so a class never predicted still enters
+    p_k = 0); products accumulate in DECIMAL(38,0) (s^2 ~ 3.6e13 at
+    sf1, safe past sf100) and convert once. The degenerate
+    single-class edges (either marginal concentrated on one class)
+    NULL R_K identically on both engines. One corpus hash agg on the
+    9-cell confusion."""
+    li = load_table(spark, sf_dir, "lineitem")
+    labeled = li.select(
+        F.col("l_returnflag").alias("truth"),
+        F.when(F.col("l_quantity") < 17, "A")
+        .when(F.col("l_quantity") < 34, "N")
+        .otherwise("R")
+        .alias("pred"),
+    )
+    cells = labeled.groupBy("truth", "pred").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    t = cells.groupBy(F.col("truth").alias("k")).agg(
+        F.sum("n").cast("bigint").alias("tk")
+    )
+    p = cells.groupBy(F.col("pred").alias("k2")).agg(
+        F.sum("n").cast("bigint").alias("pk")
+    )
+    marg = t.join(p, t.k == p.k2, "full").select(
+        F.coalesce(F.col("tk"), F.lit(0)).alias("tk"),
+        F.coalesce(F.col("pk"), F.lit(0)).alias("pk"),
+    )
+    m = marg.agg(
+        F.sum(F.col("tk").cast("decimal(38,0)") * F.col("pk"))
+        .cast("decimal(38,0)")
+        .alias("sum_tp"),
+        F.sum(F.col("tk").cast("decimal(38,0)") * F.col("tk"))
+        .cast("decimal(38,0)")
+        .alias("sum_t2"),
+        F.sum(F.col("pk").cast("decimal(38,0)") * F.col("pk"))
+        .cast("decimal(38,0)")
+        .alias("sum_p2"),
+    )
+    tot = cells.agg(
+        F.sum("n").cast("bigint").alias("s"),
+        F.sum(F.when(F.col("truth") == F.col("pred"), F.col("n")).otherwise(0))
+        .cast("bigint")
+        .alias("c"),
+    )
+    s_d = F.col("s").cast("double")
+    den_t = s_d * F.col("s") - as_d(F.col("sum_t2"))
+    den_p = s_d * F.col("s") - as_d(F.col("sum_p2"))
+    return tot.crossJoin(F.broadcast(m)).select(
+        F.col("s").alias("n"),
+        F.col("c").alias("n_correct"),
+        (F.col("c").cast("double") / F.col("s")).alias("accuracy"),
+        F.when(
+            (den_t > 0) & (den_p > 0),
+            (F.col("c").cast("double") * F.col("s") - as_d(F.col("sum_tp")))
+            / F.sqrt(den_t * den_p),
+        ).alias("mcc"),
+    )
+
+
+@register(
+    "ml_ips_offpolicy",
+    tags=("ml", "eval", "agg"),
+    oracle=f"""
+        WITH logged AS (
+            SELECT c.c_mktsegment AS ctx,
+                   o.o_orderpriority AS action,
+                   CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS r
+            FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        ),
+        ctx_tot AS (
+            SELECT ctx, CAST(COUNT(*) AS BIGINT) AS n_ctx
+            FROM logged GROUP BY ctx
+        ),
+        tgt AS (
+            SELECT l.ctx,
+                   CAST(COUNT(*) AS BIGINT) AS n_a,
+                   CAST(SUM(r) AS BIGINT) AS r_a
+            FROM logged l WHERE l.action = '2-HIGH'
+            GROUP BY l.ctx
+        ),
+        n AS (SELECT CAST(SUM(n_ctx) AS BIGINT) AS n FROM ctx_tot),
+        terms AS (
+            SELECT ct.ctx,
+                   CAST(ct.n_ctx AS DOUBLE) * tgt.r_a / tgt.n_a AS wr,
+                   CAST(ct.n_ctx AS DOUBLE) AS w
+            FROM ctx_tot ct JOIN tgt ON tgt.ctx = ct.ctx
+        )
+        SELECT n.n,
+               {o_ordered_fold_sum('ctx', 'wr')} / n.n
+                   AS ips_value,
+               {o_ordered_fold_sum('ctx', 'wr')}
+                 / {o_ordered_fold_sum('ctx', 'w')}
+                   AS snips_value
+        FROM terms CROSS JOIN n
+        GROUP BY n.n
+    """,
+)
+def ml_ips_offpolicy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Off-policy evaluation by inverse propensity scoring: what
+    fulfillment rate WOULD the deterministic policy "always 2-HIGH"
+    have achieved, estimated from logs where priorities were assigned
+    by the historical process? Context = market segment; empirical
+    propensity p(a|ctx) = n_a/n_ctx; IPS = (1/n) sum 1{a=target} r /
+    p(a|ctx), which reduces EXACTLY to (1/n) sum_ctx n_ctx * r_a/n_a
+    — group-level integer arithmetic, no per-row weights. SNIPS
+    (self-normalized) divides by sum of weights instead of n, the
+    variance-reduced estimator production OPE uses. The 5 context
+    terms fold in pinned order. A context with no target-action logs
+    drops out of BOTH estimators identically (inner join) — the
+    standard undefined-propensity exclusion, documented."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    logged = o.join(c, o.o_custkey == c.c_custkey).select(
+        F.col("c_mktsegment").alias("ctx"),
+        F.col("o_orderpriority").alias("action"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("r"),
+    )
+    ctx_tot = logged.groupBy("ctx").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_ctx")
+    )
+    tgt = (
+        logged.filter(F.col("action") == "2-HIGH")
+        .groupBy("ctx")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_a"),
+            F.sum("r").cast("bigint").alias("r_a"),
+        )
+    )
+    n = ctx_tot.agg(F.sum("n_ctx").cast("bigint").alias("n"))
+    terms = ctx_tot.join(tgt, "ctx").select(
+        "ctx",
+        (F.col("n_ctx").cast("double") * F.col("r_a") / F.col("n_a")).alias(
+            "wr"
+        ),
+        F.col("n_ctx").cast("double").alias("w"),
+    )
+    agg = terms.agg(
+        ordered_fold_sum(F.col("ctx"), F.col("wr")).alias("sum_wr"),
+        ordered_fold_sum(F.col("ctx"), F.col("w")).alias("sum_w"),
+    )
+    return agg.crossJoin(F.broadcast(n)).select(
+        "n",
+        (F.col("sum_wr") / F.col("n")).alias("ips_value"),
+        (F.col("sum_wr") / F.col("sum_w")).alias("snips_value"),
+    )
+
+
+@register(
+    "ml_fbeta_grid",
+    tags=("ml", "eval", "agg"),
+    oracle="""
+        WITH conf AS (
+            SELECT CAST(COUNT(*) FILTER (WHERE l_quantity >= 25
+                        AND l_returnflag = 'R') AS BIGINT) AS tp,
+                   CAST(COUNT(*) FILTER (WHERE l_quantity >= 25
+                        AND l_returnflag <> 'R') AS BIGINT) AS fp,
+                   CAST(COUNT(*) FILTER (WHERE l_quantity < 25
+                        AND l_returnflag = 'R') AS BIGINT) AS fn
+            FROM lineitem
+        )
+        SELECT b.beta, conf.tp, conf.fp, conf.fn,
+               CAST(conf.tp AS DOUBLE) / (conf.tp + conf.fp) AS precision_,
+               CAST(conf.tp AS DOUBLE) / (conf.tp + conf.fn) AS recall_,
+               CASE WHEN (1 + b.beta * b.beta) * conf.tp
+                         + b.beta * b.beta * conf.fn + conf.fp > 0 THEN
+                 (1 + b.beta * b.beta) * CAST(conf.tp AS DOUBLE)
+                   / ((1 + b.beta * b.beta) * conf.tp
+                      + b.beta * b.beta * conf.fn + conf.fp)
+               END AS fbeta
+        FROM conf
+        CROSS JOIN (SELECT unnest([CAST(0.5 AS DOUBLE),
+                                   CAST(1.0 AS DOUBLE),
+                                   CAST(2.0 AS DOUBLE)]) AS beta) b
+        ORDER BY b.beta
+    """,
+)
+def ml_fbeta_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F-beta scores at beta in {0.5, 1, 2} for the fixed
+    quantity >= 25 classifier against the return flag — the
+    precision-weighted / balanced / recall-weighted triple every
+    precision-recall tradeoff review wants side by side
+    (ml_threshold_sweep sweeps thresholds at F1; this sweeps beta at
+    one threshold). The smoothed form Fb = (1+b^2)tp / ((1+b^2)tp +
+    b^2 fn + fp) avoids the P,R intermediate divisions; the confusion
+    cells are exact integers from one agg, fanned over a broadcast
+    3-row beta grid. Fb NULLs only when tp=fp=fn=0 (no positives
+    anywhere — impossible on this fixture, guarded identically)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    conf = li.agg(
+        F.sum(
+            F.when(
+                (F.col("l_quantity") >= 25) & (F.col("l_returnflag") == "R"),
+                1,
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("tp"),
+        F.sum(
+            F.when(
+                (F.col("l_quantity") >= 25) & (F.col("l_returnflag") != "R"),
+                1,
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("fp"),
+        F.sum(
+            F.when(
+                (F.col("l_quantity") < 25) & (F.col("l_returnflag") == "R"),
+                1,
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("fn"),
+    )
+    betas = spark.createDataFrame([(0.5,), (1.0,), (2.0,)], "beta double")
+    b2 = F.col("beta") * F.col("beta")
+    denom = (1 + b2) * F.col("tp") + b2 * F.col("fn") + F.col("fp")
+    return (
+        conf.crossJoin(F.broadcast(betas))
+        .select(
+            "beta",
+            "tp",
+            "fp",
+            "fn",
+            (F.col("tp").cast("double") / (F.col("tp") + F.col("fp"))).alias(
+                "precision_"
+            ),
+            (F.col("tp").cast("double") / (F.col("tp") + F.col("fn"))).alias(
+                "recall_"
+            ),
+            F.when(
+                denom > 0,
+                (1 + b2) * F.col("tp").cast("double") / denom,
+            ).alias("fbeta"),
+        )
+        .orderBy("beta")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Integer-exact learning primitives on the embedding fixture: the
+# first 4 dims quantized to micro-units (q = floor(e * 1e6), exact —
+# float->double widening is lossless and floor is IEEE), label
+# y = [q0 + q1 >= 0] — the linearly-separable _logreg_features recipe
+# with every input integerized so training is rational end-to-end.
+
+
+_ML_FEATS_SQL = """
+        feats AS (
+            SELECT vec_id,
+                   CAST(FLOOR(CAST(embedding[1] AS DOUBLE) * 1e6) AS BIGINT)
+                       AS q0,
+                   CAST(FLOOR(CAST(embedding[2] AS DOUBLE) * 1e6) AS BIGINT)
+                       AS q1,
+                   CAST(FLOOR(CAST(embedding[3] AS DOUBLE) * 1e6) AS BIGINT)
+                       AS q2,
+                   CAST(FLOOR(CAST(embedding[4] AS DOUBLE) * 1e6) AS BIGINT)
+                       AS q3
+            FROM embeddings
+        ),
+        lab AS (
+            SELECT vec_id, q0, q1, q2, q3,
+                   CASE WHEN q0 + q1 >= 0 THEN 1 ELSE -1 END AS y
+            FROM feats
+        )
+"""
+
+
+def _ml_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "embeddings")
+    cols = [
+        F.floor(F.col("embedding")[i].cast("double") * F.lit(1e6))
+        .cast("bigint")
+        .alias(f"q{i}")
+        for i in range(4)
+    ]
+    feats = e.select("vec_id", *cols)
+    return feats.withColumn(
+        "y",
+        F.when(F.col("q0") + F.col("q1") >= 0, 1).otherwise(-1),
+    )
+
+
+@register(
+    "ml_perceptron_2round",
+    tags=("ml", "iterative", "agg"),
+    oracle=f"""
+        WITH {_ML_FEATS_SQL},
+        w1 AS (
+            SELECT CAST(SUM(CAST(y AS DECIMAL(20,0)))      AS BIGINT) AS w0,
+                   CAST(SUM(CAST(y AS DECIMAL(20,0)) * q0) AS BIGINT) AS wa,
+                   CAST(SUM(CAST(y AS DECIMAL(20,0)) * q1) AS BIGINT) AS wb,
+                   CAST(SUM(CAST(y AS DECIMAL(20,0)) * q2) AS BIGINT) AS wc,
+                   CAST(SUM(CAST(y AS DECIMAL(20,0)) * q3) AS BIGINT) AS wd
+            FROM lab
+        ),
+        m2 AS (
+            SELECT l.*,
+                   CAST(l.y AS DECIMAL(38,0))
+                   * (CAST(w1.w0 AS DECIMAL(25,0))
+                      + CAST(w1.wa AS DECIMAL(25,0)) * l.q0
+                      + CAST(w1.wb AS DECIMAL(25,0)) * l.q1
+                      + CAST(w1.wc AS DECIMAL(25,0)) * l.q2
+                      + CAST(w1.wd AS DECIMAL(25,0)) * l.q3) AS margin
+            FROM lab l CROSS JOIN w1
+        ),
+        w2 AS (
+            SELECT CAST(MAX(w1.w0) + SUM(CASE WHEN m2.margin <= 0
+                            THEN m2.y ELSE 0 END) AS BIGINT) AS w0,
+                   CAST(MAX(w1.wa) + SUM(CASE WHEN m2.margin <= 0
+                            THEN m2.y * m2.q0 ELSE 0 END) AS BIGINT) AS wa,
+                   CAST(MAX(w1.wb) + SUM(CASE WHEN m2.margin <= 0
+                            THEN m2.y * m2.q1 ELSE 0 END) AS BIGINT) AS wb,
+                   CAST(MAX(w1.wc) + SUM(CASE WHEN m2.margin <= 0
+                            THEN m2.y * m2.q2 ELSE 0 END) AS BIGINT) AS wc,
+                   CAST(MAX(w1.wd) + SUM(CASE WHEN m2.margin <= 0
+                            THEN m2.y * m2.q3 ELSE 0 END) AS BIGINT) AS wd,
+                   CAST(SUM(CASE WHEN m2.margin <= 0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_updates
+            FROM m2 CROSS JOIN w1
+        )
+        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM lab) AS n,
+               w2.w0, w2.wa AS w_q0, w2.wb AS w_q1, w2.wc AS w_q2,
+               w2.wd AS w_q3, w2.n_updates,
+               (SELECT CAST(SUM(CASE WHEN
+                    CAST(l.y AS DECIMAL(38,0))
+                    * (CAST(w2.w0 AS DECIMAL(25,0))
+                       + CAST(w2.wa AS DECIMAL(25,0)) * l.q0
+                       + CAST(w2.wb AS DECIMAL(25,0)) * l.q1
+                       + CAST(w2.wc AS DECIMAL(25,0)) * l.q2
+                       + CAST(w2.wd AS DECIMAL(25,0)) * l.q3) <= 0
+                    THEN 1 ELSE 0 END) AS BIGINT) FROM lab l) AS err_after
+        FROM w2
+    """,
+)
+def ml_perceptron_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-round BATCH perceptron on the quantized embedding features
+    (Rosenblatt update, learning rate 1): w0 = 0 makes round 1's
+    update the exact class-difference sum w1 = sum y*x (every margin
+    is 0, hence 'misclassified'); round 2 adds sum y*x over rows w1
+    still gets wrong; err_after counts w2's mistakes — the fixed-round
+    unrolled-iteration pattern (ml_gbdt/vec_kmeans_unrolled2
+    precedent) applied to the classic mistake-driven learner.
+    EVERYTHING is integer: micro-unit features, +-1 labels, weight
+    sums in DECIMAL(20,0), per-row margins as exact DECIMAL products
+    (|w|*|q| < 1e21 at sf1000 — inside DECIMAL(38,0) to ~sf1e12). No
+    float exists anywhere in this query. Scale: each round is one
+    map-side-combining aggregate + a 1-row broadcast — the textbook
+    distributed batch-GD shape with per-round lineage cut by the
+    1-row weight relations."""
+    lab = _ml_feats(spark, sf_dir)
+    y_d = F.col("y").cast("decimal(20,0)")
+    w1 = lab.agg(
+        F.sum(y_d).cast("bigint").alias("w0"),
+        F.sum(y_d * F.col("q0")).cast("bigint").alias("wa"),
+        F.sum(y_d * F.col("q1")).cast("bigint").alias("wb"),
+        F.sum(y_d * F.col("q2")).cast("bigint").alias("wc"),
+        F.sum(y_d * F.col("q3")).cast("bigint").alias("wd"),
+    )
+
+    def margin(wp: str):
+        return F.col("y").cast("decimal(38,0)") * (
+            F.col(f"{wp}w0").cast("decimal(25,0)")
+            + F.col(f"{wp}wa").cast("decimal(25,0)") * F.col("q0")
+            + F.col(f"{wp}wb").cast("decimal(25,0)") * F.col("q1")
+            + F.col(f"{wp}wc").cast("decimal(25,0)") * F.col("q2")
+            + F.col(f"{wp}wd").cast("decimal(25,0)") * F.col("q3")
+        )
+
+    m2 = lab.crossJoin(F.broadcast(w1)).withColumn("margin", margin(""))
+    mis = F.col("margin") <= 0
+    w2 = m2.agg(
+        (F.max("w0") + F.sum(F.when(mis, F.col("y")).otherwise(0)))
+        .cast("bigint").alias("v0"),
+        (F.max("wa") + F.sum(F.when(mis, F.col("y") * F.col("q0")).otherwise(0)))
+        .cast("bigint").alias("va"),
+        (F.max("wb") + F.sum(F.when(mis, F.col("y") * F.col("q1")).otherwise(0)))
+        .cast("bigint").alias("vb"),
+        (F.max("wc") + F.sum(F.when(mis, F.col("y") * F.col("q2")).otherwise(0)))
+        .cast("bigint").alias("vc"),
+        (F.max("wd") + F.sum(F.when(mis, F.col("y") * F.col("q3")).otherwise(0)))
+        .cast("bigint").alias("vd"),
+        F.sum(F.when(mis, 1).otherwise(0)).cast("bigint").alias("n_updates"),
+    )
+    w2r = w2.select(
+        F.col("v0").alias("w2w0"),
+        F.col("va").alias("w2wa"),
+        F.col("vb").alias("w2wb"),
+        F.col("vc").alias("w2wc"),
+        F.col("vd").alias("w2wd"),
+        "n_updates",
+    )
+    scored = lab.crossJoin(F.broadcast(w2r)).withColumn("m", margin("w2"))
+    out = scored.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.max("w2w0").alias("w0"),
+        F.max("w2wa").alias("w_q0"),
+        F.max("w2wb").alias("w_q1"),
+        F.max("w2wc").alias("w_q2"),
+        F.max("w2wd").alias("w_q3"),
+        F.max("n_updates").alias("n_updates"),
+        F.sum(F.when(F.col("m") <= 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("err_after"),
+    )
+    return out.select(
+        "n", "w0", "w_q0", "w_q1", "w_q2", "w_q3", "n_updates", "err_after"
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_gini_feature_split — CART-style split scoring, fully integer bins
+
+
+@register(
+    "ml_gini_feature_split",
+    tags=("ml", "agg", "window"),
+    oracle=f"""
+        WITH {_ML_FEATS_SQL},
+        long AS (
+            SELECT 0 AS f, q0 AS q, CASE WHEN y = 1 THEN 1 ELSE 0 END AS pos
+            FROM lab
+            UNION ALL SELECT 1, q1, CASE WHEN y = 1 THEN 1 ELSE 0 END FROM lab
+            UNION ALL SELECT 2, q2, CASE WHEN y = 1 THEN 1 ELSE 0 END FROM lab
+            UNION ALL SELECT 3, q3, CASE WHEN y = 1 THEN 1 ELSE 0 END FROM lab
+        ),
+        rngs AS (
+            SELECT f, MIN(q) AS qmin, MAX(q) AS qmax FROM long GROUP BY f
+        ),
+        binned AS (
+            SELECT long.f,
+                   CAST(((long.q - rngs.qmin) * 8)
+                        // (rngs.qmax - rngs.qmin + 1) AS BIGINT) AS bin,
+                   long.pos
+            FROM long JOIN rngs ON rngs.f = long.f
+        ),
+        cells AS (
+            SELECT f, bin,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(pos) AS BIGINT) AS p
+            FROM binned GROUP BY f, bin
+        ),
+        cum AS (
+            SELECT f, bin,
+                   CAST(SUM(n) OVER (PARTITION BY f ORDER BY bin) AS BIGINT)
+                       AS nl,
+                   CAST(SUM(p) OVER (PARTITION BY f ORDER BY bin) AS BIGINT)
+                       AS pl,
+                   CAST(SUM(n) OVER (PARTITION BY f) AS BIGINT) AS nt,
+                   CAST(SUM(p) OVER (PARTITION BY f) AS BIGINT) AS pt
+            FROM cells
+        ),
+        scored AS (
+            SELECT f, bin, nl, nt - nl AS nr,
+                   (CAST(nt AS DOUBLE)
+                    - (CAST(pt * pt AS DOUBLE)
+                       + CAST((nt - pt) * (nt - pt) AS DOUBLE))
+                      / CAST(nt AS DOUBLE))
+                   - ((CAST(nl AS DOUBLE)
+                       - (CAST(pl * pl AS DOUBLE)
+                          + CAST((nl - pl) * (nl - pl) AS DOUBLE))
+                         / CAST(nl AS DOUBLE))
+                      + (CAST(nt - nl AS DOUBLE)
+                         - (CAST((pt - pl) * (pt - pl) AS DOUBLE)
+                            + CAST(((nt - nl) - (pt - pl))
+                                   * ((nt - nl) - (pt - pl)) AS DOUBLE))
+                           / CAST(nt - nl AS DOUBLE))) AS dec_abs
+            FROM cum WHERE nl > 0 AND nt - nl > 0
+        ),
+        best AS (
+            SELECT f, bin, nl, nr, dec_abs,
+                   ROW_NUMBER() OVER (PARTITION BY f
+                       ORDER BY dec_abs DESC, bin) AS rk
+            FROM scored
+        )
+        SELECT CAST(f AS INT) AS feature, CAST(bin AS INT) AS best_bin,
+               nl AS n_left, nr AS n_right,
+               dec_abs / CAST((SELECT MAX(nt) FROM cum) AS DOUBLE)
+                   AS gini_decrease
+        FROM best WHERE rk = 1 ORDER BY feature
+    """,
+)
+def ml_gini_feature_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CART split scoring: for each of the 4 quantized embedding
+    features, the 8-bin threshold maximizing the Gini impurity
+    decrease n*G(parent) - [nL*G(L) + nR*G(R)] (reported per-sample) —
+    the feature-ranking half of decision-tree induction, complementing
+    ml_chi2_feature_select with the impurity criterion trees actually
+    split on. Bins are PURE INTEGER arithmetic ((q - min) * 8 //
+    (max - min + 1) — BIGINT div, no float bin edges); count
+    squares stay in BIGINT (ceiling ~sf4e3 on p^2*...; products cast
+    to double ONCE each); the decrease is one fixed-parenthesization
+    double expression and the per-feature argmax tie-breaks on bin.
+    Degenerate single-side splits are excluded exactly (nl/nr > 0).
+    Scale: one scan into a 4x8-cell agg; everything downstream is
+    grid-sized."""
+    lab = _ml_feats(spark, sf_dir)
+    parts = []
+    for f in range(4):
+        parts.append(
+            lab.select(
+                F.lit(f).alias("f"),
+                F.col(f"q{f}").alias("q"),
+                F.when(F.col("y") == 1, 1).otherwise(0).alias("pos"),
+            )
+        )
+    long = parts[0].unionByName(parts[1]).unionByName(parts[2]).unionByName(
+        parts[3]
+    )
+    rngs = long.groupBy("f").agg(
+        F.min("q").alias("qmin"), F.max("q").alias("qmax")
+    )
+    binned = long.join(F.broadcast(rngs), "f").select(
+        "f",
+        F.expr("CAST(((q - qmin) * 8) div (qmax - qmin + 1) AS BIGINT)")
+        .alias("bin"),
+        "pos",
+    )
+    cells = binned.groupBy("f", "bin").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("pos").cast("bigint").alias("p"),
+    )
+    wcum = Window.partitionBy("f").orderBy("bin")
+    wall = Window.partitionBy("f")
+    cum = cells.select(
+        "f",
+        "bin",
+        F.sum("n").over(wcum).cast("bigint").alias("nl"),
+        F.sum("p").over(wcum).cast("bigint").alias("pl"),
+        F.sum("n").over(wall).cast("bigint").alias("nt"),
+        F.sum("p").over(wall).cast("bigint").alias("pt"),
+    )
+    nl, pl = F.col("nl"), F.col("pl")
+    nt, pt = F.col("nt"), F.col("pt")
+    nr, pr = nt - nl, pt - pl
+
+    def gini_term(nn, pp):
+        return nn.cast("double") - (
+            (pp * pp).cast("double") + ((nn - pp) * (nn - pp)).cast("double")
+        ) / nn.cast("double")
+
+    scored = cum.filter((nl > 0) & (nr > 0)).select(
+        "f",
+        "bin",
+        "nl",
+        nr.alias("nr"),
+        "nt",
+        (gini_term(nt, pt) - (gini_term(nl, pl) + gini_term(nr, pr))).alias(
+            "dec_abs"
+        ),
+    )
+    wbest = Window.partitionBy("f").orderBy(F.col("dec_abs").desc(), "bin")
+    return (
+        scored.withColumn("rk", F.row_number().over(wbest))
+        .filter(F.col("rk") == 1)
+        .select(
+            F.col("f").cast("int").alias("feature"),
+            F.col("bin").cast("int").alias("best_bin"),
+            F.col("nl").alias("n_left"),
+            F.col("nr").alias("n_right"),
+            (F.col("dec_abs") / F.col("nt").cast("double")).alias(
+                "gini_decrease"
+            ),
+        )
+        .orderBy("feature")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_macro_f1 — multiclass macro-averaged F1 of a bin-majority model
+
+
+@register(
+    "ml_macro_f1",
+    tags=("ml", "eval", "agg"),
+    oracle=f"""
+        WITH rng AS (
+            SELECT MIN(o_totalprice) AS pmin, MAX(o_totalprice) AS pmax
+            FROM orders
+        ),
+        coded AS (
+            SELECT o_orderpriority AS actual,
+                   CASE WHEN pmax = pmin THEN 0
+                        ELSE LEAST(7, CAST(FLOOR(
+                       (CAST(o_totalprice AS DOUBLE)
+                        - CAST(pmin AS DOUBLE))
+                       / ((CAST(pmax AS DOUBLE) - CAST(pmin AS DOUBLE))
+                          / CAST(8 AS DOUBLE))) AS INT)) END AS bin
+            FROM orders CROSS JOIN rng
+        ),
+        binmaj AS (
+            SELECT bin, MAX({{'cnt': cnt, 'cl': actual}}).cl AS pred
+            FROM (SELECT bin, actual, CAST(COUNT(*) AS BIGINT) AS cnt
+                  FROM coded GROUP BY bin, actual)
+            GROUP BY bin
+        ),
+        conf AS (
+            SELECT c.actual, b.pred, CAST(COUNT(*) AS BIGINT) AS n
+            FROM coded c JOIN binmaj b ON b.bin = c.bin
+            GROUP BY c.actual, b.pred
+        ),
+        cls AS (SELECT DISTINCT actual AS cl FROM coded),
+        perclass AS (
+            SELECT cls.cl,
+                   CAST(COALESCE(SUM(CASE WHEN conf.actual = cls.cl
+                                           AND conf.pred = cls.cl
+                                     THEN conf.n END), 0) AS BIGINT) AS tp,
+                   CAST(COALESCE(SUM(CASE WHEN conf.pred = cls.cl
+                                           AND conf.actual <> cls.cl
+                                     THEN conf.n END), 0) AS BIGINT) AS fp,
+                   CAST(COALESCE(SUM(CASE WHEN conf.actual = cls.cl
+                                           AND conf.pred <> cls.cl
+                                     THEN conf.n END), 0) AS BIGINT) AS fn
+            FROM cls LEFT JOIN conf ON TRUE
+            GROUP BY cls.cl
+        ),
+        scored AS (
+            SELECT cl, tp, fp, fn,
+                   CASE WHEN 2 * tp + fp + fn > 0 THEN
+                     CAST(2 * tp AS DOUBLE)
+                       / CAST(2 * tp + fp + fn AS DOUBLE)
+                   ELSE CAST(0 AS DOUBLE) END AS f1
+            FROM perclass
+        ),
+        mac AS (
+            SELECT {o_ordered_fold_sum('cl', 'f1')}
+                     / CAST(COUNT(*) AS DOUBLE) AS macro_f1
+            FROM scored
+        )
+        SELECT s.cl AS class, s.tp, s.fp, s.fn, s.f1, m.macro_f1
+        FROM scored s CROSS JOIN mac m
+        ORDER BY class
+    """,
+)
+def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Macro-averaged F1 of the bin-majority classifier that predicts
+    order PRIORITY from the order-value octile (train = score =
+    resubstitution, documented): per-class F1 = 2TP/(2TP+FP+FN) — the
+    multiclass counterpart of ml_fbeta_grid's binary scores and the
+    number reported by every imbalanced-multiclass eval. The majority
+    label per bin is an exact integer argmax (max (count, class)
+    struct — ties break to the lexicographically LARGEST class,
+    identical in both engines' struct/ROW ordering); the confusion
+    marginals are integer sums; each F1 is one guarded division
+    (convention: no-support classes score 0, not NULL); the macro
+    average is an ORDER-PINNED fold over the class list divided by the
+    class count. Scale: two scans + grid-sized joins; the class
+    relation is 5 rows."""
+    o = load_table(spark, sf_dir, "orders")
+    rng = o.agg(
+        F.min("o_totalprice").alias("pmin"), F.max("o_totalprice").alias("pmax")
+    )
+    coded = o.crossJoin(F.broadcast(rng)).select(
+        F.col("o_orderpriority").alias("actual"),
+        F.when(F.col("pmax") == F.col("pmin"), F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(7),
+                F.floor(
+                    (F.col("o_totalprice").cast("double")
+                     - F.col("pmin").cast("double"))
+                    / ((F.col("pmax").cast("double")
+                        - F.col("pmin").cast("double")) / F.lit(8.0))
+                ).cast("int"),
+            )
+        ).alias("bin"),
+    )
+    binmaj = (
+        coded.groupBy("bin", "actual")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .groupBy("bin")
+        .agg(F.max(F.struct("cnt", "actual")).alias("best"))
+        .select("bin", F.col("best.actual").alias("pred"))
+    )
+    conf = (
+        coded.join(F.broadcast(binmaj), "bin")
+        .groupBy("actual", "pred")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    cls = coded.select(F.col("actual").alias("cl")).distinct()
+    perclass = (
+        cls.crossJoin(F.broadcast(conf))
+        .groupBy("cl")
+        .agg(
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        (F.col("actual") == F.col("cl"))
+                        & (F.col("pred") == F.col("cl")),
+                        F.col("n"),
+                    )
+                ),
+                F.lit(0),
+            ).cast("bigint").alias("tp"),
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        (F.col("pred") == F.col("cl"))
+                        & (F.col("actual") != F.col("cl")),
+                        F.col("n"),
+                    )
+                ),
+                F.lit(0),
+            ).cast("bigint").alias("fp"),
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        (F.col("actual") == F.col("cl"))
+                        & (F.col("pred") != F.col("cl")),
+                        F.col("n"),
+                    )
+                ),
+                F.lit(0),
+            ).cast("bigint").alias("fn"),
+        )
+    )
+    den = 2 * F.col("tp") + F.col("fp") + F.col("fn")
+    scored = perclass.select(
+        "cl",
+        "tp",
+        "fp",
+        "fn",
+        F.when(den > 0, (2 * F.col("tp")).cast("double") / den.cast("double"))
+        .otherwise(F.lit(0.0))
+        .alias("f1"),
+    )
+    mac = scored.agg(
+        (
+            ordered_fold_sum(F.col("cl"), F.col("f1"))
+            / F.count(F.lit(1)).cast("double")
+        ).alias("macro_f1")
+    )
+    return (
+        scored.crossJoin(F.broadcast(mac))
+        .select(
+            F.col("cl").alias("class"), "tp", "fp", "fn", "f1", "macro_f1"
+        )
+        .orderBy("class")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_average_precision_at_k — retrieval AP@10 on the cosine ranking
+
+
+@register(
+    "ml_average_precision_at_k",
+    tags=("ml", "eval", "vector"),
+    oracle=f"""
+        WITH q AS (
+            SELECT embedding AS qe, label AS ql FROM embeddings
+            WHERE vec_id = 0
+        ),
+        scored AS (
+            SELECT e.vec_id,
+                   CASE WHEN e.label = q.ql THEN 1 ELSE 0 END AS rel,
+                   list_sum(list_transform(list_zip(q.qe, e.embedding),
+                       p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+                   / (sqrt(list_sum(list_transform(q.qe,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                      * sqrt(list_sum(list_transform(e.embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
+                       AS cos_sim
+            FROM embeddings e CROSS JOIN q
+            WHERE e.vec_id <> 0
+        ),
+        ranked AS (
+            SELECT rel,
+                   ROW_NUMBER() OVER (ORDER BY cos_sim DESC, vec_id) AS rk,
+                   SUM(rel) OVER (ORDER BY cos_sim DESC, vec_id) AS cum_rel
+            FROM scored
+        ),
+        rtot AS (
+            SELECT CAST(SUM(rel) AS BIGINT) AS n_relevant FROM scored
+        ),
+        ap AS (
+            SELECT {o_ordered_fold_sum(
+                'rk',
+                'CAST(rel AS DOUBLE) * (CAST(cum_rel AS DOUBLE) / CAST(rk AS DOUBLE))',
+            )} AS num
+            FROM ranked WHERE rk <= 10
+        )
+        SELECT rtot.n_relevant,
+               CASE WHEN LEAST(rtot.n_relevant, 10) > 0 THEN
+                 ap.num / CAST(LEAST(rtot.n_relevant, 10) AS DOUBLE)
+               END AS ap_at_10
+        FROM rtot CROSS JOIN ap
+    """,
+)
+def ml_average_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Average precision at k=10 for the retrieval task 'find vectors
+    sharing query 0's label' ranked by exact cosine: AP@10 =
+    sum_{k<=10} rel_k * P@k / min(R, 10) — the single-query building
+    block of MAP, the ranking-quality number IR evals report alongside
+    recall (vec_recall_curve). The ranking reuses the proven exact
+    cosine machinery (sequential-fold dot product, deterministic
+    (sim, id) tie-break); rel and cum_rel are integers; the 10
+    precision terms are single divisions folded in ORDER-PINNED rank
+    order; the normalizer min(R, 10) is exact. R = 0 NULLs identically
+    (cannot occur at shipped SFs — labels repeat; asserted by the
+    reference test). Scale: one broadcast-query scan + a top-10
+    window."""
+    from finance_etl_spark.functions.vectors import cosine
+
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") == 0).select(
+        F.col("embedding").alias("qe"), F.col("label").alias("ql")
+    )
+    scored = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q)).select(
+        "vec_id",
+        F.when(F.col("label") == F.col("ql"), 1).otherwise(0).alias("rel"),
+        cosine("qe", "embedding").alias("cos_sim"),
+    )
+    wrk = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
+    ranked = scored.select(
+        "rel",
+        F.row_number().over(wrk).alias("rk"),
+        F.sum("rel").over(wrk).alias("cum_rel"),
+    )
+    rtot = scored.agg(F.sum("rel").cast("bigint").alias("n_relevant"))
+    ap = ranked.filter(F.col("rk") <= 10).agg(
+        ordered_fold_sum(
+            F.col("rk"),
+            F.col("rel").cast("double")
+            * (F.col("cum_rel").cast("double") / F.col("rk").cast("double")),
+        ).alias("num")
+    )
+    kk = F.least(F.col("n_relevant"), F.lit(10))
+    return (
+        rtot.crossJoin(F.broadcast(ap))
+        .select(
+            "n_relevant",
+            F.when(kk > 0, F.col("num") / kk.cast("double")).alias("ap_at_10"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_split_balance_audit — md5 train/test split stratification check
+
+
+@register(
+    "ml_split_balance_audit",
+    tags=("ml", "dq", "agg"),
+    oracle="""
+        WITH gated AS (
+            SELECT o_orderpriority AS class,
+                   CASE WHEN CAST('0x' || SUBSTRING(
+                            md5(CAST(o_orderkey AS VARCHAR)), 1, 4) AS BIGINT)
+                        < 52429 THEN 1 ELSE 0 END AS is_train
+            FROM orders
+        ),
+        per AS (
+            SELECT class,
+                   CAST(SUM(is_train) AS BIGINT) AS n_train,
+                   CAST(SUM(1 - is_train) AS BIGINT) AS n_test
+            FROM gated GROUP BY class
+        ),
+        gtot AS (
+            SELECT CAST(SUM(n_train) AS BIGINT) AS gt,
+                   CAST(SUM(n_train + n_test) AS BIGINT) AS gn
+            FROM per
+        )
+        SELECT class, n_train, n_test,
+               CAST(n_train AS DOUBLE) / CAST(n_train + n_test AS DOUBLE)
+                   AS train_frac,
+               CAST(n_train AS DOUBLE) / CAST(n_train + n_test AS DOUBLE)
+                 - CAST(gt AS DOUBLE) / CAST(gn AS DOUBLE) AS dev_from_global
+        FROM per CROSS JOIN gtot
+        ORDER BY class
+    """,
+)
+def ml_split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stratification audit of the deterministic md5 80/20 train/test
+    split (16-bit gate < 52429 = floor(0.8*65536), the
+    cur_stratified_sample recipe): per priority class, the realized
+    train fraction and its deviation from the global split rate —
+    the pre-training balance check every pipeline should run before
+    trusting a hash split (a skewed class here means the key
+    correlates with the hash, i.e. a broken ladder). Counts are
+    conditional-sum integers; fractions are single divisions; the
+    deviation subtracts two identically-computed doubles. Every class
+    is non-empty by the fixture schema (priority is NOT NULL). One
+    scan, one 5-row agg."""
+    o = load_table(spark, sf_dir, "orders")
+    gate = F.conv(
+        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 4), 16, 10
+    ).cast("bigint")
+    gated = o.select(
+        F.col("o_orderpriority").alias("class"),
+        F.when(gate < 52429, 1).otherwise(0).alias("is_train"),
+    )
+    per = gated.groupBy("class").agg(
+        F.sum("is_train").cast("bigint").alias("n_train"),
+        F.sum(1 - F.col("is_train")).cast("bigint").alias("n_test"),
+    )
+    glob = per.agg(
+        F.sum("n_train").cast("bigint").alias("gt"),
+        F.sum(F.col("n_train") + F.col("n_test")).cast("bigint").alias("gn"),
+    )
+    frac = F.col("n_train").cast("double") / (
+        F.col("n_train") + F.col("n_test")
+    ).cast("double")
+    return (
+        per.crossJoin(F.broadcast(glob))
+        .select(
+            "class",
+            "n_train",
+            "n_test",
+            frac.alias("train_frac"),
+            (frac - F.col("gt").cast("double") / F.col("gn").cast("double"))
+            .alias("dev_from_global"),
+        )
+        .orderBy("class")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_topk_accuracy — top-1 / top-2 accuracy of the bin-majority model
+
+
+@register(
+    "ml_topk_accuracy",
+    tags=("ml", "eval", "agg"),
+    oracle="""
+        WITH rng AS (
+            SELECT MIN(o_totalprice) AS pmin, MAX(o_totalprice) AS pmax
+            FROM orders
+        ),
+        coded AS (
+            SELECT o_orderpriority AS actual,
+                   CASE WHEN pmax = pmin THEN 0
+                        ELSE LEAST(7, CAST(FLOOR(
+                       (CAST(o_totalprice AS DOUBLE)
+                        - CAST(pmin AS DOUBLE))
+                       / ((CAST(pmax AS DOUBLE) - CAST(pmin AS DOUBLE))
+                          / CAST(8 AS DOUBLE))) AS INT)) END AS bin
+            FROM orders CROSS JOIN rng
+        ),
+        ranked AS (
+            SELECT bin, actual AS cl,
+                   ROW_NUMBER() OVER (PARTITION BY bin
+                       ORDER BY COUNT(*) DESC, actual) AS rk
+            FROM coded GROUP BY bin, actual
+        ),
+        hits AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(CASE WHEN r.rk = 1 THEN 1 ELSE 0 END) AS BIGINT)
+                       AS top1,
+                   CAST(SUM(CASE WHEN r.rk <= 2 THEN 1 ELSE 0 END) AS BIGINT)
+                       AS top2
+            FROM coded c
+            LEFT JOIN ranked r ON r.bin = c.bin AND r.cl = c.actual
+        )
+        SELECT n, top1 AS top1_correct, top2 AS top2_correct,
+               CAST(top1 AS DOUBLE) / CAST(n AS DOUBLE) AS top1_acc,
+               CAST(top2 AS DOUBLE) / CAST(n AS DOUBLE) AS top2_acc
+        FROM hits
+    """,
+)
+def ml_topk_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-1 / top-2 accuracy of the bin-majority priority classifier
+    (the ml_macro_f1 model viewed as a RANKING over classes per bin,
+    count-desc with class-asc tie-break): a row scores at k if its
+    actual class ranks within the bin's top k — the eval that matters
+    when the consumer takes the model's top-k candidates rather than
+    its argmax. Rankings are integer counts with a deterministic
+    tie-break; hits are integer conditional sums (actual classes
+    absent from a bin rank NULL and miss exactly — LEFT join keeps the
+    row in n); accuracies are single divisions. One scan + one
+    grid-sized window."""
+    o = load_table(spark, sf_dir, "orders")
+    rng = o.agg(
+        F.min("o_totalprice").alias("pmin"), F.max("o_totalprice").alias("pmax")
+    )
+    coded = o.crossJoin(F.broadcast(rng)).select(
+        F.col("o_orderpriority").alias("actual"),
+        F.when(F.col("pmax") == F.col("pmin"), F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(7),
+                F.floor(
+                    (F.col("o_totalprice").cast("double")
+                     - F.col("pmin").cast("double"))
+                    / ((F.col("pmax").cast("double")
+                        - F.col("pmin").cast("double")) / F.lit(8.0))
+                ).cast("int"),
+            )
+        ).alias("bin"),
+    )
+    wrk = Window.partitionBy("bin").orderBy(
+        F.col("cnt").desc(), F.col("cl")
+    )
+    ranked = (
+        coded.groupBy("bin", F.col("actual").alias("cl"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("rk", F.row_number().over(wrk))
+        .select("bin", "cl", "rk")
+    )
+    hits = (
+        coded.join(
+            F.broadcast(ranked),
+            (coded.bin == ranked.bin) & (coded.actual == ranked.cl),
+            "left",
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(F.when(F.col("rk") == 1, 1).otherwise(0))
+            .cast("bigint")
+            .alias("top1"),
+            F.sum(F.when(F.col("rk") <= 2, 1).otherwise(0))
+            .cast("bigint")
+            .alias("top2"),
+        )
+    )
+    return hits.select(
+        "n",
+        F.col("top1").alias("top1_correct"),
+        F.col("top2").alias("top2_correct"),
+        (F.col("top1").cast("double") / F.col("n").cast("double")).alias(
+            "top1_acc"
+        ),
+        (F.col("top2").cast("double") / F.col("n").cast("double")).alias(
+            "top2_acc"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_psi_stability — population stability index between two periods
+
+
+@register(
+    "ml_psi_stability",
+    tags=("ml", "eval", "agg"),
+    oracle=f"""
+        WITH base AS (
+            SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS cents,
+                   CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS INT)
+                       AS yr
+            FROM orders
+            WHERE EXTRACT(year FROM CAST(o_orderdate AS DATE)) IN (1995, 1996)
+        ),
+        rng AS (SELECT MIN(cents) AS lo, MAX(cents) AS hi FROM base),
+        binned AS (
+            SELECT CASE WHEN r.hi = r.lo THEN 0
+                        ELSE LEAST(9, ((b.cents - r.lo) * 10)
+                                      // (r.hi - r.lo + 1)) END AS bin,
+                   b.yr
+            FROM base b CROSS JOIN rng r
+        ),
+        spine AS (SELECT UNNEST(range(10)) AS bin),
+        cnts AS (
+            SELECT s.bin,
+                   CAST(COALESCE(SUM(CASE WHEN yr = 1995 THEN 1 END), 0)
+                        AS BIGINT) AS c_ref,
+                   CAST(COALESCE(SUM(CASE WHEN yr = 1996 THEN 1 END), 0)
+                        AS BIGINT) AS c_cur
+            FROM spine s LEFT JOIN binned b ON b.bin = s.bin
+            GROUP BY s.bin
+        ),
+        tots AS (
+            SELECT CAST(SUM(c_ref) AS BIGINT) AS n_ref,
+                   CAST(SUM(c_cur) AS BIGINT) AS n_cur
+            FROM cnts
+        ),
+        terms AS (
+            SELECT c.bin,
+                   (CAST(c.c_ref + 1 AS DOUBLE) / CAST(t.n_ref + 10 AS DOUBLE)
+                    - CAST(c.c_cur + 1 AS DOUBLE)
+                      / CAST(t.n_cur + 10 AS DOUBLE))
+                   * CAST(ln((CAST(c.c_ref + 1 AS DOUBLE)
+                              / CAST(t.n_ref + 10 AS DOUBLE))
+                             / (CAST(c.c_cur + 1 AS DOUBLE)
+                                / CAST(t.n_cur + 10 AS DOUBLE)))
+                       AS DECIMAL(12,6)) AS term
+            FROM cnts c CROSS JOIN tots t
+        )
+        SELECT t.n_ref, t.n_cur,
+               {o_ordered_fold_sum('bin', 'CAST(term AS DOUBLE)')} AS psi,
+               CASE WHEN {o_ordered_fold_sum('bin', 'CAST(term AS DOUBLE)')}
+                         < CAST('0.1' AS DOUBLE) THEN 'stable'
+                    WHEN {o_ordered_fold_sum('bin', 'CAST(term AS DOUBLE)')}
+                         < CAST('0.25' AS DOUBLE) THEN 'moderate_shift'
+                    ELSE 'major_shift' END AS verdict
+        FROM terms, tots t
+        GROUP BY t.n_ref, t.n_cur
+    """,
+)
+def ml_psi_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Population Stability Index between the 1995 and 1996 order-value
+    distributions — THE model-monitoring drift metric (PSI < 0.1
+    stable, 0.1-0.25 watch, > 0.25 retrain): PSI = sum over bins of
+    (p - q) ln(p/q) with +1 Laplace smoothing so empty bins are
+    defined. Engine-exact: bins are pure INTEGER arithmetic
+    (((cents - lo) * 10) div (hi - lo + 1), degenerate-range guarded),
+    the 10-bin spine guarantees every bin exists on both engines,
+    shares are exact-integer rationals, ln(p/q) quantizes to
+    DECIMAL(12,6) per bin, and the 10-term sum folds in PINNED bin
+    order. One scan + a 10-row grid; the verdict thresholds are
+    string-routed shared constants."""
+    o = load_table(spark, sf_dir, "orders")
+    base = o.select(
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("cents"),
+        F.year(F.col("o_orderdate").cast("date")).alias("yr"),
+    ).filter(F.col("yr").isin(1995, 1996))
+    rng = base.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
+    binned = base.crossJoin(F.broadcast(rng)).select(
+        F.when(F.col("hi") == F.col("lo"), F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(9),
+                F.expr("((cents - lo) * 10) DIV (hi - lo + 1)"),
+            )
+        )
+        .alias("bin"),
+        "yr",
+    )
+    spine = spark.range(10).select(F.col("id").alias("bin"))
+    cnts = (
+        spine.join(binned, "bin", "left")
+        .groupBy("bin")
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("yr") == 1995, 1)), F.lit(0)
+            )
+            .cast("bigint")
+            .alias("c_ref"),
+            F.coalesce(
+                F.sum(F.when(F.col("yr") == 1996, 1)), F.lit(0)
+            )
+            .cast("bigint")
+            .alias("c_cur"),
+        )
+    )
+    tots = cnts.agg(
+        F.sum("c_ref").cast("bigint").alias("n_ref"),
+        F.sum("c_cur").cast("bigint").alias("n_cur"),
+    )
+    p = (F.col("c_ref") + 1).cast("double") / (F.col("n_ref") + 10).cast(
+        "double"
+    )
+    q = (F.col("c_cur") + 1).cast("double") / (F.col("n_cur") + 10).cast(
+        "double"
+    )
+    term = (p - q) * F.log(p / q).cast("decimal(12,6)").cast("double")
+    terms = cnts.crossJoin(F.broadcast(tots)).select(
+        "bin", "n_ref", "n_cur", term.alias("term")
+    )
+    agg = terms.groupBy("n_ref", "n_cur").agg(
+        ordered_fold_sum(F.col("bin"), F.col("term")).alias("psi")
+    )
+    return agg.select(
+        "n_ref",
+        "n_cur",
+        "psi",
+        F.when(F.col("psi") < F.lit("0.1").cast("double"), "stable")
+        .when(F.col("psi") < F.lit("0.25").cast("double"), "moderate_shift")
+        .otherwise("major_shift")
+        .alias("verdict"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_weighted_kappa — linear-weighted Cohen kappa for ordinal raters
+
+
+@register(
+    "ml_weighted_kappa",
+    tags=("ml", "eval", "agg"),
+    oracle="""
+        WITH rng AS (
+            SELECT MIN(o_totalprice) AS pmin, MAX(o_totalprice) AS pmax
+            FROM orders
+        ),
+        coded AS (
+            SELECT CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS i,
+                   CASE WHEN pmax = pmin THEN 1
+                        ELSE LEAST(4, CAST(FLOOR(
+                       (CAST(o_totalprice AS DOUBLE)
+                        - CAST(pmin AS DOUBLE))
+                       / ((CAST(pmax AS DOUBLE) - CAST(pmin AS DOUBLE))
+                          / CAST(5 AS DOUBLE))) AS INT)) + 1 END AS j
+            FROM orders CROSS JOIN rng
+        ),
+        cells AS (
+            SELECT i, j, CAST(COUNT(*) AS BIGINT) AS o
+            FROM coded GROUP BY i, j
+        ),
+        ri AS (SELECT i, CAST(SUM(o) AS BIGINT) AS r FROM cells GROUP BY i),
+        cj AS (SELECT j, CAST(SUM(o) AS BIGINT) AS c FROM cells GROUP BY j),
+        tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
+        od AS (
+            SELECT CAST(SUM(CAST(o AS DECIMAL(38,0)) * ABS(i - j))
+                        AS DECIMAL(38,0)) AS sum_od
+            FROM cells
+        ),
+        ed AS (
+            SELECT CAST(SUM(CAST(ri.r AS DECIMAL(38,0)) * cj.c
+                            * ABS(ri.i - cj.j)) AS DECIMAL(38,0)) AS sum_ed
+            FROM ri CROSS JOIN cj
+        )
+        SELECT t.n,
+               CAST(CAST(od.sum_od AS VARCHAR) AS BIGINT) AS obs_disagree,
+               CAST(CAST(ed.sum_ed AS VARCHAR) AS DOUBLE) AS exp_disagree_xn,
+               CASE WHEN ed.sum_ed > 0 THEN
+                 1.0 - (CAST(t.n AS DOUBLE)
+                        * CAST(CAST(od.sum_od AS VARCHAR) AS DOUBLE))
+                       / CAST(CAST(ed.sum_ed AS VARCHAR) AS DOUBLE)
+               END AS weighted_kappa
+        FROM tot t, od, ed
+    """,
+)
+def ml_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linear-weighted Cohen kappa between two ORDINAL raters —
+    priority (1..5) vs order-value quintile (1..5): kappa_w = 1 -
+    (n * sum O_ij |i-j|) / (sum r_i c_j |i-j|) — the ordinal
+    agreement measure where near-misses cost less than far misses
+    (Cohen 1968), completing the agreement family next to the binary
+    ml_cohen_kappa. Everything is exact integer/decimal arithmetic
+    (cell disagreement mass, marginal-product expectation) up to ONE
+    guarded double division; the quintile bin reuses stat_gk_gamma's
+    guarded arithmetic. One scan + a 25-cell grid."""
+    o = load_table(spark, sf_dir, "orders")
+    rng = o.agg(
+        F.min("o_totalprice").alias("pmin"), F.max("o_totalprice").alias("pmax")
+    )
+    coded = o.crossJoin(F.broadcast(rng)).select(
+        F.substring("o_orderpriority", 1, 1).cast("int").alias("i"),
+        (
+            F.when(F.col("pmax") == F.col("pmin"), F.lit(1)).otherwise(
+                F.least(
+                    F.lit(4),
+                    F.floor(
+                        (F.col("o_totalprice").cast("double")
+                         - F.col("pmin").cast("double"))
+                        / ((F.col("pmax").cast("double")
+                            - F.col("pmin").cast("double")) / F.lit(5.0))
+                    ).cast("int"),
+                )
+                + 1
+            )
+        ).alias("j"),
+    )
+    cells = coded.groupBy("i", "j").agg(
+        F.count(F.lit(1)).cast("bigint").alias("o")
+    ).persist()
+    ri = cells.groupBy("i").agg(F.sum("o").cast("bigint").alias("r"))
+    cj = cells.groupBy("j").agg(F.sum("o").cast("bigint").alias("c"))
+    tot = cells.agg(F.sum("o").cast("bigint").alias("n"))
+    od = cells.agg(
+        F.sum(
+            F.col("o").cast("decimal(38,0)") * F.abs(F.col("i") - F.col("j"))
+        )
+        .cast("decimal(38,0)")
+        .alias("sum_od")
+    )
+    ed = ri.crossJoin(cj).agg(
+        F.sum(
+            F.col("r").cast("decimal(38,0)")
+            * F.col("c")
+            * F.abs(F.col("i") - F.col("j"))
+        )
+        .cast("decimal(38,0)")
+        .alias("sum_ed")
+    )
+    return (
+        tot.crossJoin(F.broadcast(od))
+        .crossJoin(F.broadcast(ed))
+        .select(
+            "n",
+            F.col("sum_od").cast("string").cast("bigint").alias("obs_disagree"),
+            F.col("sum_ed").cast("string").cast("double").alias(
+                "exp_disagree_xn"
+            ),
+            F.when(
+                F.col("sum_ed") > 0,
+                F.lit(1.0)
+                - (
+                    F.col("n").cast("double")
+                    * F.col("sum_od").cast("string").cast("double")
+                )
+                / F.col("sum_ed").cast("string").cast("double"),
+            ).alias("weighted_kappa"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_cluster_ari — adjusted Rand index between two labelings
+
+
+@register(
+    "ml_cluster_ari",
+    tags=("ml", "eval"),
+    oracle="""
+        WITH cells AS MATERIALIZED (
+            SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS nij
+            FROM documents GROUP BY lang, source
+        ),
+        sij AS (
+            SELECT CAST(SUM((nij * (nij - 1)) // 2) AS BIGINT) AS sum_ij
+            FROM cells
+        ),
+        sa AS (
+            SELECT CAST(SUM((ai * (ai - 1)) // 2) AS BIGINT) AS sum_a
+            FROM (SELECT CAST(SUM(nij) AS BIGINT) AS ai
+                  FROM cells GROUP BY lang)
+        ),
+        sb AS (
+            SELECT CAST(SUM((bj * (bj - 1)) // 2) AS BIGINT) AS sum_b
+            FROM (SELECT CAST(SUM(nij) AS BIGINT) AS bj
+                  FROM cells GROUP BY source)
+        ),
+        tot AS (
+            SELECT CAST(SUM(nij) AS BIGINT) AS n,
+                   CAST((SUM(nij) * (SUM(nij) - 1)) // 2 AS BIGINT) AS c2n
+            FROM cells
+        )
+        SELECT n, sum_ij, sum_a, sum_b, c2n,
+               CASE WHEN (CAST(sum_a AS DOUBLE) + CAST(sum_b AS DOUBLE))
+                         / CAST(2 AS DOUBLE)
+                      <> CAST(sum_a AS DOUBLE) * CAST(sum_b AS DOUBLE)
+                         / CAST(c2n AS DOUBLE)
+               THEN
+                 (CAST(sum_ij AS DOUBLE)
+                    - CAST(sum_a AS DOUBLE) * CAST(sum_b AS DOUBLE)
+                      / CAST(c2n AS DOUBLE))
+                 / ((CAST(sum_a AS DOUBLE) + CAST(sum_b AS DOUBLE))
+                      / CAST(2 AS DOUBLE)
+                    - CAST(sum_a AS DOUBLE) * CAST(sum_b AS DOUBLE)
+                      / CAST(c2n AS DOUBLE))
+               END AS ari
+        FROM sij CROSS JOIN sa CROSS JOIN sb CROSS JOIN tot
+    """,
+)
+def ml_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Adjusted Rand index between the language and source partitions
+    of the document corpus — the chance-corrected pair-counting
+    agreement number used to score a clustering (e.g. the semantic-
+    dedup k-means) against any reference labeling: ARI = (sum_ij C2 -
+    E) / ((sum_a + sum_b)/2 - E), E = sum_a*sum_b/C2(n). Exactness:
+    every C(x,2) = x(x-1) DIV 2 is an exact BIGINT (the product is
+    always even), so the three pair sums and C2(n) are exact integers;
+    ARI is one double expression parenthesized identically on both
+    engines, NULL-guarded on the degenerate both-trivial-partitions
+    case with the IDENTICAL predicate. Distributed shape: one
+    contingency hash agg (cells bounded by |langs| x |sources|), then
+    scalar state."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    cells = d.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nij")
+    ).persist()
+    sij = cells.agg(
+        F.sum(F.expr("CAST((nij * (nij - 1)) DIV 2 AS BIGINT)"))
+        .cast("bigint")
+        .alias("sum_ij")
+    )
+    sa = (
+        cells.groupBy("lang")
+        .agg(F.sum("nij").cast("bigint").alias("ai"))
+        .agg(
+            F.sum(F.expr("CAST((ai * (ai - 1)) DIV 2 AS BIGINT)"))
+            .cast("bigint")
+            .alias("sum_a")
+        )
+    )
+    sb = (
+        cells.groupBy("source")
+        .agg(F.sum("nij").cast("bigint").alias("bj"))
+        .agg(
+            F.sum(F.expr("CAST((bj * (bj - 1)) DIV 2 AS BIGINT)"))
+            .cast("bigint")
+            .alias("sum_b")
+        )
+    )
+    tot = cells.agg(
+        F.sum("nij").cast("bigint").alias("n"),
+        F.expr(
+            "CAST((SUM(nij) * (SUM(nij) - 1)) DIV 2 AS BIGINT)"
+        ).alias("c2n"),
+    )
+    two = F.lit(2).cast("double")
+    e_term = (
+        F.col("sum_a").cast("double")
+        * F.col("sum_b").cast("double")
+        / F.col("c2n").cast("double")
+    )
+    m_term = (
+        F.col("sum_a").cast("double") + F.col("sum_b").cast("double")
+    ) / two
+    ari = F.when(
+        m_term != e_term,
+        (F.col("sum_ij").cast("double") - e_term) / (m_term - e_term),
+    )
+    return (
+        sij.crossJoin(F.broadcast(sa))
+        .crossJoin(F.broadcast(sb))
+        .crossJoin(F.broadcast(tot))
+        .select("n", "sum_ij", "sum_a", "sum_b", "c2n", ari.alias("ari"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_cluster_nmi — normalized mutual information between two labelings
+
+
+@register(
+    "ml_cluster_nmi",
+    tags=("ml", "eval"),
+    oracle="""
+        WITH cells AS MATERIALIZED (
+            SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS nij
+            FROM documents GROUP BY lang, source
+        ),
+        ai AS (SELECT lang, CAST(SUM(nij) AS BIGINT) AS ai
+               FROM cells GROUP BY lang),
+        bj AS (SELECT source, CAST(SUM(nij) AS BIGINT) AS bj
+               FROM cells GROUP BY source),
+        tot AS (SELECT CAST(SUM(nij) AS BIGINT) AS n FROM cells),
+        mi_sum AS (
+            SELECT CAST(CAST(SUM(
+                     c.nij * CAST(ln(
+                       (CAST(c.nij AS DOUBLE) * CAST(t.n AS DOUBLE))
+                       / (CAST(a.ai AS DOUBLE) * CAST(b.bj AS DOUBLE))
+                     ) AS DECIMAL(12,6))
+                   ) AS VARCHAR) AS DOUBLE) AS mi_n
+            FROM cells c
+            JOIN ai a ON a.lang = c.lang
+            JOIN bj b ON b.source = c.source
+            CROSS JOIN tot t
+        ),
+        hx_sum AS (
+            SELECT -CAST(CAST(SUM(
+                     a.ai * CAST(ln(CAST(a.ai AS DOUBLE)
+                                    / CAST(t.n AS DOUBLE))
+                             AS DECIMAL(12,6))
+                   ) AS VARCHAR) AS DOUBLE) AS hx_n
+            FROM ai a CROSS JOIN tot t
+        ),
+        hy_sum AS (
+            SELECT -CAST(CAST(SUM(
+                     b.bj * CAST(ln(CAST(b.bj AS DOUBLE)
+                                    / CAST(t.n AS DOUBLE))
+                             AS DECIMAL(12,6))
+                   ) AS VARCHAR) AS DOUBLE) AS hy_n
+            FROM bj b CROSS JOIN tot t
+        )
+        SELECT n,
+               mi_n / CAST(n AS DOUBLE) AS mi,
+               hx_n / CAST(n AS DOUBLE) AS hx,
+               hy_n / CAST(n AS DOUBLE) AS hy,
+               CASE WHEN hx_n / CAST(n AS DOUBLE)
+                         + hy_n / CAST(n AS DOUBLE) > CAST(0 AS DOUBLE)
+               THEN CAST(2 AS DOUBLE) * (mi_n / CAST(n AS DOUBLE))
+                    / (hx_n / CAST(n AS DOUBLE) + hy_n / CAST(n AS DOUBLE))
+               END AS nmi
+        FROM mi_sum CROSS JOIN hx_sum CROSS JOIN hy_sum CROSS JOIN tot
+    """,
+)
+def ml_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Normalized mutual information between the language and source
+    labelings (the information-theoretic sibling of ml_cluster_ari):
+    NMI = 2*I(X;Y) / (H(X)+H(Y)). Engine-exact via the quantized-log
+    recipe (text_ngram_entropy precedent): each cell's
+    ln(nij*N/(ai*bj)) and each margin's ln(p) quantize to
+    DECIMAL(12,6), so I*N, Hx*N, Hy*N are exact integer-by-decimal
+    dot products; the three presentation divisions and the final
+    ratio are shared double expressions parenthesized identically.
+    Distributed shape: one contingency hash agg, margins broadcast
+    (|langs| and |sources| are content-bounded), scalar state after."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    cells = d.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nij")
+    ).persist()
+    ai = cells.groupBy("lang").agg(F.sum("nij").cast("bigint").alias("ai"))
+    bj = cells.groupBy("source").agg(
+        F.sum("nij").cast("bigint").alias("bj")
+    )
+    tot = cells.agg(F.sum("nij").cast("bigint").alias("n"))
+    mi_ln = F.log(
+        (F.col("nij").cast("double") * F.col("n").cast("double"))
+        / (F.col("ai").cast("double") * F.col("bj").cast("double"))
+    ).cast("decimal(12,6)")
+    mi_sum = (
+        cells.join(F.broadcast(ai), "lang")
+        .join(F.broadcast(bj), "source")
+        .crossJoin(F.broadcast(tot))
+        .agg(as_d(F.sum(F.col("nij") * mi_ln)).alias("mi_n"))
+    )
+    hx_ln = F.log(
+        F.col("ai").cast("double") / F.col("n").cast("double")
+    ).cast("decimal(12,6)")
+    hx_sum = (
+        ai.crossJoin(F.broadcast(tot))
+        .agg((-as_d(F.sum(F.col("ai") * hx_ln))).alias("hx_n"))
+    )
+    hy_ln = F.log(
+        F.col("bj").cast("double") / F.col("n").cast("double")
+    ).cast("decimal(12,6)")
+    hy_sum = (
+        bj.crossJoin(F.broadcast(tot))
+        .agg((-as_d(F.sum(F.col("bj") * hy_ln))).alias("hy_n"))
+    )
+    nd = F.col("n").cast("double")
+    mi = F.col("mi_n") / nd
+    hx = F.col("hx_n") / nd
+    hy = F.col("hy_n") / nd
+    nmi = F.when(
+        hx + hy > F.lit(0).cast("double"), F.lit(2).cast("double") * mi / (hx + hy)
+    )
+    return (
+        mi_sum.crossJoin(F.broadcast(hx_sum))
+        .crossJoin(F.broadcast(hy_sum))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "n",
+            mi.alias("mi"),
+            hx.alias("hx"),
+            hy.alias("hy"),
+            nmi.alias("nmi"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_balanced_accuracy — fixed-rule confusion summary
+
+
+@register(
+    "ml_balanced_accuracy",
+    tags=("ml", "eval", "agg"),
+    oracle="""
+        WITH conf AS (
+            SELECT l_linestatus AS status,
+                   CAST(SUM(CASE WHEN l_discount >= 0.05
+                            AND l_returnflag = 'R' THEN 1 ELSE 0 END)
+                        AS BIGINT) AS tp,
+                   CAST(SUM(CASE WHEN l_discount >= 0.05
+                            AND l_returnflag <> 'R' THEN 1 ELSE 0 END)
+                        AS BIGINT) AS fp,
+                   CAST(SUM(CASE WHEN l_discount < 0.05
+                            AND l_returnflag = 'R' THEN 1 ELSE 0 END)
+                        AS BIGINT) AS fn,
+                   CAST(SUM(CASE WHEN l_discount < 0.05
+                            AND l_returnflag <> 'R' THEN 1 ELSE 0 END)
+                        AS BIGINT) AS tn
+            FROM lineitem GROUP BY l_linestatus
+        )
+        SELECT status, tp, fp, fn, tn,
+               CASE WHEN tp + fn > 0 AND tn + fp > 0 THEN
+                   (CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE)
+                    + CAST(tn AS DOUBLE) / CAST(tn + fp AS DOUBLE))
+                   / CAST(2 AS DOUBLE) END AS balanced_accuracy,
+               CASE WHEN tp + fn > 0 THEN
+                   CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END
+                   AS sensitivity,
+               CASE WHEN tn + fp > 0 THEN
+                   CAST(tn AS DOUBLE) / CAST(tn + fp AS DOUBLE) END
+                   AS specificity
+        FROM conf ORDER BY status
+    """,
+)
+def ml_balanced_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Balanced accuracy of the fixed high-discount -> returned rule,
+    per line status — the imbalance-robust headline number
+    ((TPR + TNR) / 2) that plain accuracy fakes on skewed labels, and
+    the fixed-threshold complement to ml_youden_j's threshold sweep.
+    The 2x2 confusion cells are exact BIGINT conditional counts in
+    ONE map-side-combining pass (no joins); balanced accuracy,
+    sensitivity, and specificity are each one guarded double
+    expression with identical degenerate-class predicates on both
+    engines. Scale: one scan, k-status-row state."""
+    li = load_table(spark, sf_dir, "lineitem")
+    pred = F.col("l_discount") >= 0.05
+    pos = F.col("l_returnflag") == "R"
+    conf = li.groupBy(F.col("l_linestatus").alias("status")).agg(
+        F.sum((pred & pos).cast("int")).cast("bigint").alias("tp"),
+        F.sum((pred & ~pos).cast("int")).cast("bigint").alias("fp"),
+        F.sum((~pred & pos).cast("int")).cast("bigint").alias("fn"),
+        F.sum((~pred & ~pos).cast("int")).cast("bigint").alias("tn"),
+    )
+    tpr = F.col("tp").cast("double") / (F.col("tp") + F.col("fn")).cast(
+        "double"
+    )
+    tnr = F.col("tn").cast("double") / (F.col("tn") + F.col("fp")).cast(
+        "double"
+    )
+    has_pos = (F.col("tp") + F.col("fn")) > 0
+    has_neg = (F.col("tn") + F.col("fp")) > 0
+    return conf.select(
+        "status",
+        "tp",
+        "fp",
+        "fn",
+        "tn",
+        F.when(has_pos & has_neg, (tpr + tnr) / F.lit(2).cast("double"))
+        .alias("balanced_accuracy"),
+        F.when(has_pos, tpr).alias("sensitivity"),
+        F.when(has_neg, tnr).alias("specificity"),
+    ).orderBy("status")

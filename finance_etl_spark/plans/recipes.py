@@ -298,6 +298,27 @@ DAILY_SCALED_SQL = f"""
 # ---------------------------------------------------------------------------
 # Document tokens.
 
+# Token = non-empty run split on single spaces; the fixture corpus is
+# space-joined. (A \s+ split would differ from DuckDB's string_split.)
+SPACE = " "
+
+# Tiny stopword list used by the quality scores; part of the declared
+# semantics, not a linguistic claim.
+STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
+
+# Average bigram NLL above which a document is dropped (splits ~40/60
+# at every SF). A SQL literal, so both engines compare against the
+# same decimal.
+PPL_THRESHOLD = "3.4"
+
+# 256 two-hex-digit buckets from the md5 of the doc id: below 'cc'
+# (204) → train, below 'e6' (230) → val, rest → test. Lexicographic
+# comparison of lowercase hex is identical in Spark and DuckDB, so the
+# assignment is engine- and cluster-layout-independent: a doc's split
+# never changes when the corpus is repartitioned or regenerated.
+HASH_SPLIT_TRAIN_HI, HASH_SPLIT_VAL_HI = "cc", "e6"
+
+
 def tokens(df: DataFrame) -> DataFrame:
     """(doc_id, pos, tok) — exploded non-empty tokens."""
     return (
@@ -452,8 +473,9 @@ def ncdf_sql(d: str) -> str:
     as a fully-CAST SQL fragment that parses to IDENTICAL double
     arithmetic in Spark SQL and DuckDB (every literal is CAST AS
     DOUBLE — DuckDB would otherwise parse them as DECIMAL). Shared
-    between engine and oracle, so the independent erf-based pytest in
-    tests/test_round9_ops.py is the guard against fragment bugs."""
+    between engine and oracle, so the independent erf-based pytests in
+    tests/test_recipes.py and tests/test_round9_ops.py guard against fragment
+    bugs."""
     t = (
         "(CAST('1.0' AS DOUBLE) / (CAST('1.0' AS DOUBLE)"
         f" + CAST(0.2316419 AS DOUBLE) * abs({d})))"
@@ -474,3 +496,143 @@ def ncdf_sql(d: str) -> str:
         f"(CASE WHEN ({d}) >= CAST(0.0 AS DOUBLE) THEN {nabs}"
         f" ELSE CAST('1.0' AS DOUBLE) - {nabs} END)"
     )
+
+
+# ---------------------------------------------------------------------------
+# The five TPC-H order priorities, in rank order.
+
+ORDER_PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+
+
+# ---------------------------------------------------------------------------
+# Poisson(1) inverse-CDF ladder over a 16-bit md5 bucket: the exact
+# integer thresholds floor(CDF(k) * 65536). Poissonized resampling is
+# the standard distributed approximation of the multinomial bootstrap
+# (each row's multiplicity in a resample of n rows -> Poisson(1) as
+# n grows; Chamandy et al., "Estimating Uncertainty for Massive Data
+# Streams", Google TR 2012) — and unlike the multinomial it needs no
+# global coordination: each (row, replicate) draws independently.
+POIS_THRESH = (24109, 48218, 60273, 64291, 65296, 65497, 65530, 65535)
+
+
+def pois_case(u: Column) -> Column:
+    """CASE ladder mapping a 16-bit uniform to a Poisson(1) draw."""
+    w = F.when(u < POIS_THRESH[0], 0)
+    for idx, t in enumerate(POIS_THRESH[1:], start=1):
+        w = w.when(u < t, idx)
+    return w.otherwise(len(POIS_THRESH))
+
+
+def pois_case_sql(u: str) -> str:
+    arms = " ".join(
+        f"WHEN {u} < {t} THEN {k}" for k, t in enumerate(POIS_THRESH)
+    )
+    return f"CASE {arms} ELSE {len(POIS_THRESH)} END"
+
+
+# ---------------------------------------------------------------------------
+# Exact CUSUM single-changepoint arg-max over (event_type, d, rn, xq)
+# daily series: n*prefix_t - t*S in DECIMAL(38,0), earliest-index
+# tiebreak, one double division per output at the edge.
+
+def cusum_changepoint(daily: DataFrame) -> DataFrame:
+    """(event_type, n, cp_index, cp_date, cusum_peak, mean_before,
+    mean_after) per series of ``daily`` (event_type, d, rn, xq)."""
+    wcum = (
+        Window.partitionBy("event_type")
+        .orderBy("rn")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wall = Window.partitionBy("event_type")
+    pre = daily.select(
+        "event_type",
+        "d",
+        "rn",
+        F.sum("xq").over(wcum).cast("bigint").alias("prefix"),
+        F.sum("xq").over(wall).cast("bigint").alias("s"),
+        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
+    )
+    dev = pre.filter(F.col("rn") < F.col("n")).withColumn(
+        "dabs",
+        F.abs(
+            F.col("n").cast("decimal(38,0)") * F.col("prefix")
+            - F.col("rn").cast("decimal(38,0)") * F.col("s")
+        ),
+    )
+    wpick = Window.partitionBy("event_type").orderBy(
+        F.col("dabs").desc(), F.col("rn")
+    )
+    best = dev.withColumn("pick", F.row_number().over(wpick)).filter(
+        F.col("pick") == 1
+    )
+    return best.select(
+        "event_type",
+        "n",
+        F.col("rn").cast("bigint").alias("cp_index"),
+        F.col("d").alias("cp_date"),
+        (
+            F.col("dabs").cast("string").cast("double")
+            / (F.col("n").cast("double") * F.lit(1e6))
+        ).alias("cusum_peak"),
+        (
+            F.col("prefix").cast("double") / (F.col("rn").cast("double") * F.lit(1e6))
+        ).alias("mean_before"),
+        (
+            (F.col("s") - F.col("prefix")).cast("double")
+            / ((F.col("n") - F.col("rn")).cast("double") * F.lit(1e6))
+        ).alias("mean_after"),
+    ).orderBy("event_type")
+
+
+CUSUM_CHANGEPOINT_SQL = f"""
+        WITH daily AS (
+            {EVENT_DAILY_XQ_SQL}
+        ),
+        pre AS (
+            SELECT event_type, d, rn, xq,
+                   CAST(SUM(xq) OVER (PARTITION BY event_type ORDER BY rn
+                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix,
+                   CAST(SUM(xq) OVER (PARTITION BY event_type)
+                        AS BIGINT) AS s,
+                   CAST(COUNT(*) OVER (PARTITION BY event_type)
+                        AS BIGINT) AS n
+            FROM daily
+        ),
+        dev AS (
+            SELECT event_type, d, rn, prefix, s, n,
+                   abs(CAST(n AS DECIMAL(38,0)) * prefix
+                       - CAST(rn AS DECIMAL(38,0)) * s) AS dabs
+            FROM pre WHERE rn < n
+        ),
+        best AS (
+            SELECT event_type, d, rn, prefix, s, n, dabs,
+                   ROW_NUMBER() OVER (PARTITION BY event_type
+                       ORDER BY dabs DESC, rn) AS pick
+            FROM dev
+        )
+        SELECT event_type, n, CAST(rn AS BIGINT) AS cp_index, d AS cp_date,
+               CAST(CAST(dabs AS VARCHAR) AS DOUBLE)
+                 / (CAST(n AS DOUBLE) * 1e6) AS cusum_peak,
+               CAST(prefix AS DOUBLE) / (CAST(rn AS DOUBLE) * 1e6)
+                   AS mean_before,
+               CAST(s - prefix AS DOUBLE)
+                 / (CAST(n - rn AS DOUBLE) * 1e6) AS mean_after
+        FROM best WHERE pick = 1
+        ORDER BY event_type
+    """
+
+
+# ---------------------------------------------------------------------------
+# Clicks and per-(user, ts) max purchases from events, the two sides of
+# the backward as-of join (DuckDB ASOF LEFT JOIN on the oracle side).
+
+CLICKS_PURCHASES_CTE = """
+        WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+             purchases AS (SELECT user_id, ts, MAX(value) AS value
+                           FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts)"""
+
+ASOF_LAST_PURCHASE_SQL = f"""{CLICKS_PURCHASES_CTE}
+        SELECT c.event_id, c.user_id, c.ts, p.value AS last_purchase_value
+        FROM clicks c ASOF LEFT JOIN purchases p
+          ON c.user_id = p.user_id AND c.ts >= p.ts
+    """

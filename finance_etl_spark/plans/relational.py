@@ -13,8 +13,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import cents, dsum, dsum_cents, o_davg, o_dsum
+from finance_etl_spark.functions.money import (
+    cents,
+    dsum,
+    dsum_cents,
+    lsum,
+    o_davg,
+    o_dsum,
+    o_lsum,
+)
 from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.plans.recipes import (
+    DAILY_Q6_SQL,
+    SEG_DAILY_SQL,
+    daily_q6,
+    seg_daily,
+)
 from finance_etl_spark.plans.registry import register
 
 
@@ -4473,3 +4487,333 @@ def geo_geohash_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gh30",
         f"{_GH6_SPARK} AS geohash6",
     ).orderBy("c_custkey")
+
+
+@register(
+    "window_weighted_moving_avg",
+    tags=("window", "timeseries"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        cents AS (
+            SELECT segment, d,
+                   CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+            FROM daily
+        ),
+        lagged AS (
+            SELECT segment, d, v,
+                   {", ".join(
+                       f"LAG(v, {k}) OVER (PARTITION BY segment ORDER BY d)"
+                       f" AS v{k}"
+                       for k in range(1, 7)
+                   )}
+            FROM cents
+        )
+        SELECT segment, d,
+               CAST(v AS DOUBLE) / 100 AS value,
+               CASE WHEN v6 IS NOT NULL THEN
+                 CAST(7 * v + 6 * v1 + 5 * v2 + 4 * v3 + 3 * v4 + 2 * v5
+                      + 1 * v6 AS DOUBLE) / 28 / 100
+               END AS wma7
+        FROM lagged
+        ORDER BY segment, d
+    """,
+)
+def window_weighted_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linearly-weighted 7-day moving average per segment (weights
+    7..1, newest heaviest) — the WMA that sits between the flat SMA
+    and ts_ewma_smooth's exponential decay in every charting stack.
+    Implemented as SIX static lags + one exact integer dot product
+    per row (no frame aggregation, no fold): weights x cents stay
+    integers, the single division by 2800 happens at the double edge,
+    and rows without a full 7-day history are NULL on both engines.
+    Per-segment calendar-bounded windows; corpus work is the daily
+    agg."""
+    daily = seg_daily(spark, sf_dir)
+    cents = daily.select(
+        "segment",
+        "d",
+        (F.col("x").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+    )
+    w = Window.partitionBy("segment").orderBy("d")
+    lagged = cents.select(
+        "segment",
+        "d",
+        "v",
+        *[F.lag("v", k).over(w).alias(f"v{k}") for k in range(1, 7)],
+    )
+    wma_num = (
+        7 * F.col("v")
+        + 6 * F.col("v1")
+        + 5 * F.col("v2")
+        + 4 * F.col("v3")
+        + 3 * F.col("v4")
+        + 2 * F.col("v5")
+        + 1 * F.col("v6")
+    )
+    return lagged.select(
+        "segment",
+        "d",
+        (F.col("v").cast("double") / 100).alias("value"),
+        F.when(
+            F.col("v6").isNotNull(),
+            wma_num.cast("double") / 28 / 100,
+        ).alias("wma7"),
+    ).orderBy("segment", "d")
+
+
+@register(
+    "sql_values_inline_table",
+    tags=("sql", "join"),
+    oracle="""
+        WITH tiers(priority, tier, weight) AS (
+            VALUES ('1-URGENT', 'expedite', 3),
+                   ('2-HIGH', 'expedite', 2),
+                   ('3-MEDIUM', 'standard', 1),
+                   ('4-NOT SPECIFIED', 'standard', 1),
+                   ('5-LOW', 'economy', 1)
+        )
+        SELECT t.tier,
+               CAST(COUNT(*) AS BIGINT) AS n_orders,
+               CAST(SUM(t.weight) AS BIGINT) AS weighted_orders
+        FROM orders o JOIN tiers t ON t.priority = o.o_orderpriority
+        GROUP BY t.tier
+        ORDER BY t.tier
+    """,
+)
+def sql_values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ANSI VALUES inline-table surface: a literal 5-row tier
+    dimension declared in SQL (named columns, no temp view, no
+    createDataFrame) broadcast-joined to orders — the idiomatic way to
+    ship a tiny hand-maintained mapping inside a query, exercised
+    through spark.sql VALUES exactly as a SQL-first user would write
+    it. Counts exact; the join is a broadcast hash join against the
+    inline relation (Catalyst folds VALUES to a LocalRelation, no
+    scan)."""
+    o = load_table(spark, sf_dir, "orders")
+    o.createOrReplaceTempView("r11_orders_v")
+    return spark.sql(
+        """
+        WITH tiers(priority, tier, weight) AS (
+            VALUES ('1-URGENT', 'expedite', 3),
+                   ('2-HIGH', 'expedite', 2),
+                   ('3-MEDIUM', 'standard', 1),
+                   ('4-NOT SPECIFIED', 'standard', 1),
+                   ('5-LOW', 'economy', 1)
+        )
+        SELECT t.tier,
+               CAST(COUNT(*) AS BIGINT) AS n_orders,
+               CAST(SUM(t.weight) AS BIGINT) AS weighted_orders
+        FROM r11_orders_v o JOIN tiers t ON t.priority = o.o_orderpriority
+        GROUP BY t.tier
+        ORDER BY t.tier
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# sql_quantified_rewrite — ALL-predicate emulation
+
+
+@register(
+    "sql_quantified_rewrite",
+    tags=("sql", "subquery"),
+    oracle="""
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_dominating,
+               CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
+               CAST(CAST(MAX(CAST(o_totalprice AS DECIMAL(12,2)))
+                    AS VARCHAR) AS DOUBLE) AS max_price
+        FROM orders
+        WHERE EXTRACT(year FROM CAST(o_orderdate AS DATE)) = 1998
+          AND o_totalprice > ALL (
+              SELECT o_totalprice FROM orders
+              WHERE EXTRACT(year FROM CAST(o_orderdate AS DATE)) = 1992)
+    """,
+)
+def sql_quantified_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantified comparison predicate (> ALL) — a surface Spark SQL
+    does NOT parse — rewritten to its scalar-aggregate equivalent:
+    x > ALL(S) == x > (SELECT MAX(S)) when S is non-empty, with the
+    empty-S edge (ALL over empty is TRUE; MAX over empty is NULL,
+    which would wrongly drop every row) guarded by an explicit
+    IS-empty branch. Here: 1998 orders whose value dominates EVERY
+    1992 order. The oracle runs DuckDB's native > ALL, so the rewrite
+    is verified against a real quantified-predicate implementation,
+    not against itself. The MAX subquery is a 1-row broadcast; the
+    probe side is a pushed-down year filter scan. The empty edge is
+    not theoretical: the sf0.001 fixture has NO 1992 orders, so the
+    guard branch is exercised (and agrees with DuckDB's native ALL)
+    at every round's triple-SF sweep."""
+    o = load_table(spark, sf_dir, "orders")
+    y92 = o.filter(F.year("o_orderdate") == 1992).agg(
+        F.max("o_totalprice").alias("mx"),
+        F.count(F.lit(1)).cast("bigint").alias("n92"),
+    )
+    y98 = o.filter(F.year("o_orderdate") == 1998)
+    dominating = y98.crossJoin(F.broadcast(y92)).filter(
+        (F.col("n92") == 0) | (F.col("o_totalprice") > F.col("mx"))
+    )
+    return dominating.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_dominating"),
+        F.min("o_orderkey").cast("bigint").alias("min_key"),
+        F.max(F.col("o_totalprice").cast("decimal(12,2)"))
+        .cast("string")
+        .cast("double")
+        .alias("max_price"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# window_dist_functions — cume_dist / percent_rank / nth_value surface
+
+
+@register(
+    "window_dist_functions",
+    tags=("window", "sql"),
+    oracle=f"""
+        WITH base AS (
+            SELECT o_orderpriority AS pri,
+                   CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS cents,
+                   o_orderkey
+            FROM orders
+        ),
+        win AS (
+            SELECT pri,
+                   cume_dist() OVER wo AS cd,
+                   percent_rank() OVER wo AS pr,
+                   nth_value(cents, 3) OVER (PARTITION BY pri
+                       ORDER BY cents, o_orderkey
+                       ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND UNBOUNDED FOLLOWING) AS third_cents
+            FROM base
+            WINDOW wo AS (PARTITION BY pri ORDER BY cents, o_orderkey)
+        )
+        SELECT pri,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(CASE WHEN cd <= CAST('0.25' AS DOUBLE)
+                             THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_lower_quartile,
+               {o_lsum('pr')} AS pr_q6_sum,
+               CAST(MAX(third_cents) AS BIGINT) AS third_lowest_cents
+        FROM win GROUP BY pri ORDER BY pri
+    """,
+)
+def window_dist_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distribution-window-function surface in one query:
+    cume_dist(), percent_rank(), and nth_value() over a full-partition
+    frame, per order priority on a UNIQUE (cents, orderkey) ordering
+    so every rank function is an exact rational of integers —
+    cume_dist = rn/n, percent_rank = (rn-1)/(n-1), both bit-equal
+    across engines as single divisions. The per-priority census keeps
+    the output grid-sized: lower-quartile membership count (cd <=
+    0.25 compares exact rationals), percent_rank mass as a
+    floor-quantized q6 BIGINT sum, and the partition's third-lowest
+    price via nth_value over the unbounded frame (NOT the default
+    running frame — the frame clause is the surface under test). One
+    priority-partitioned sort at corpus scale."""
+    o = load_table(spark, sf_dir, "orders")
+    base = o.select(
+        F.col("o_orderpriority").alias("pri"),
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("cents"),
+        "o_orderkey",
+    )
+    wo = Window.partitionBy("pri").orderBy("cents", "o_orderkey")
+    wfull = wo.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    win = base.select(
+        "pri",
+        F.cume_dist().over(wo).alias("cd"),
+        F.percent_rank().over(wo).alias("pr"),
+        F.nth_value("cents", 3).over(wfull).alias("third_cents"),
+    )
+    return (
+        win.groupBy("pri")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(
+                F.when(
+                    F.col("cd") <= F.lit("0.25").cast("double"), 1
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_lower_quartile"),
+            lsum(F.col("pr")).alias("pr_q6_sum"),
+            F.max("third_cents").cast("bigint").alias("third_lowest_cents"),
+        )
+        .orderBy("pri")
+    )
+
+
+# ---------------------------------------------------------------------------
+# window_hampel_filter — rolling median +- k*MAD outlier flags
+
+
+@register(
+    "window_hampel_filter",
+    tags=("window", "timeseries", "dq"),
+    oracle=f"""
+        WITH daily AS MATERIALIZED ({DAILY_Q6_SQL}),
+        w1 AS (
+            SELECT event_type, d, v,
+                   list(v) OVER (PARTITION BY event_type ORDER BY d
+                                 ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+                       AS l
+            FROM daily
+        ),
+        w2 AS (
+            SELECT event_type, d, v, l, list_sort(l)[4] AS med
+            FROM w1 WHERE len(l) = 7
+        ),
+        w3 AS (
+            SELECT event_type, d, v, med,
+                   list_sort(list_transform(l, x -> abs(x - med)))[4] AS mad
+            FROM w2
+        )
+        SELECT event_type, CAST(d AS DATE) AS d, v, med, mad,
+               (abs(v - med) > 3 * mad) AS is_outlier
+        FROM w3
+    """,
+)
+def window_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hampel filter over the daily per-type series: a 7-point centered
+    rolling MEDIAN and rolling MAD (median absolute deviation), a
+    point flagged when |x - med| > 3*MAD — the robust outlier detector
+    that, unlike z-scores, doesn't let the outlier inflate its own
+    yardstick. Exactness: daily values are 1e-6 floor-quantized
+    BIGINTs; median and MAD are PINNED order statistics (4th of the
+    sorted 7-element frame — never an engine median/percentile call),
+    so every number including the boolean is exact integer arithmetic.
+    Edge frames (<7 points) are excluded, matching the oracle's len=7
+    filter. Distributed shape: one window over calendar-bounded daily
+    aggregates partitioned by event_type; the frame sort is 7 elements
+    per row — O(1) work per point, no global sort."""
+    daily = daily_q6(spark, sf_dir)
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("d")
+        .rowsBetween(-3, 3)
+    )
+    framed = daily.withColumn("l", F.collect_list("v").over(w)).filter(
+        F.size("l") == 7
+    )
+    med = F.element_at(F.array_sort("l"), 4)
+    framed = framed.withColumn("med", med)
+    mad = F.element_at(
+        F.array_sort(
+            F.transform(F.col("l"), lambda x: F.abs(x - F.col("med")))
+        ),
+        4,
+    )
+    return framed.select(
+        "event_type",
+        F.col("d").cast("date").alias("d"),
+        "v",
+        "med",
+        mad.alias("mad"),
+        (F.abs(F.col("v") - F.col("med")) > F.lit(3) * mad).alias(
+            "is_outlier"
+        ),
+    )

@@ -831,3 +831,88 @@ def scalar_luhn_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("c_custkey")
         .limit(500)
     )
+
+
+# ---------------------------------------------------------------------------
+# array_hof_stats — higher-order array function surface
+
+
+@register(
+    "array_hof_stats",
+    tags=("array", "agg"),
+    oracle="""
+        WITH arrs AS (
+            SELECT l.l_orderkey,
+                   list(CAST(l.l_quantity AS BIGINT)
+                        ORDER BY l.l_linenumber) AS qs
+            FROM lineitem l GROUP BY l.l_orderkey
+        ),
+        hof AS (
+            SELECT a.l_orderkey,
+                   len(a.qs) AS n_lines,
+                   list_reduce(
+                       list_prepend(CAST(0 AS BIGINT),
+                           list_transform(
+                               list_filter(a.qs, q -> q > 25),
+                               q -> q * 2)),
+                       (acc, x) -> acc + x) AS hi_doubled
+            FROM arrs a
+        )
+        SELECT o.o_orderpriority AS priority,
+               CAST(COUNT(*) AS BIGINT) AS n_orders,
+               CAST(SUM(h.n_lines) AS BIGINT) AS total_lines,
+               CAST(SUM(h.hi_doubled) AS BIGINT) AS total_hi_doubled,
+               CAST(MAX(h.n_lines) AS BIGINT) AS max_lines
+        FROM hof h JOIN orders o ON o.o_orderkey = h.l_orderkey
+        GROUP BY o.o_orderpriority ORDER BY priority
+    """,
+)
+def array_hof_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Higher-order array function surface in one verifiable pipeline:
+    per order, the line quantities are collected in LINE ORDER
+    (array_sort over (linenumber, qty) structs vs list(... ORDER BY) —
+    the pinned-order collect recipe), then filter (> 25) -> transform
+    (x2) -> aggregate (sum) runs entirely inside the array — the
+    transform/filter/aggregate trio Spark executes in whole-stage
+    codegen (no UDF, no explode round-trip; compare
+    array_explode_outer's row-fan-out shape). Quantities are exact
+    integers so every HOF output is integer; the per-priority rollup
+    is exact sums. Scale: one orderkey shuffle to build arrays (basket
+    size is scale-free), one AQE-sized orders join, one 5-row agg."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_linenumber",
+        F.col("l_quantity").cast("bigint").alias("q"),
+    )
+    arrs = li.groupBy("l_orderkey").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("l_linenumber", "q"))),
+            lambda s: s["q"],
+        ).alias("qs")
+    )
+    hof = arrs.select(
+        "l_orderkey",
+        F.size("qs").cast("bigint").alias("n_lines"),
+        F.aggregate(
+            F.transform(
+                F.filter(F.col("qs"), lambda q: q > 25),
+                lambda q: q * 2,
+            ),
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
+        ).alias("hi_doubled"),
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority"
+    )
+    return (
+        hof.join(o, hof.l_orderkey == o.o_orderkey)
+        .groupBy(F.col("o_orderpriority").alias("priority"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.sum("n_lines").cast("bigint").alias("total_lines"),
+            F.sum("hi_doubled").cast("bigint").alias("total_hi_doubled"),
+            F.max("n_lines").cast("bigint").alias("max_lines"),
+        )
+        .orderBy("priority")
+    )

@@ -26,17 +26,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import as_d, fsum, o_fsum, o_ordered_fold_sum
-from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.functions.money import (
+    as_d,
+    fsum,
+    o_fsum,
+    o_ordered_fold_sum,
+    ordered_fold_sum,
+)
+from finance_etl_spark.io.readers import load_table, load_table_parallel
 from finance_etl_spark.plans.recipes import (
+    DAILY_Q6_SQL,
     DAILY_SCALED_SQL,
     EVENT_DAILY_SQL,
+    ORDER_PRIORITIES,
     PHI2_CELL_SQL,
+    SEG_DAILY_SQL,
+    daily_q6,
     daily_scaled,
     event_daily,
     midranks2,
     ncdf_sql,
     phi2_cell,
+    pois_case,
+    pois_case_sql,
+    seg_daily,
 )
 from finance_etl_spark.plans.registry import register
 
@@ -343,23 +356,7 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partition-order independent, and identically reproducible in the
 # DuckDB oracle: the whole resampling distribution is hash-checkable.
 
-# Poisson(1) inverse-CDF ladder over a 16-bit md5 bucket: the exact
-# integer thresholds floor(CDF(k) * 65536). Poissonized resampling is
-# the standard distributed approximation of the multinomial bootstrap
-# (each row's multiplicity in a resample of n rows -> Poisson(1) as
-# n grows; Chamandy et al., "Estimating Uncertainty for Massive Data
-# Streams", Google TR 2012) — and unlike the multinomial it needs no
-# global coordination: each (row, replicate) draws independently.
-_POIS_THRESH = (24109, 48218, 60273, 64291, 65296, 65497, 65530, 65535)
 _N_BOOT = 64
-
-
-def _pois_case_sql(u: str) -> str:
-    """CASE ladder mapping a 16-bit uniform to a Poisson(1) draw."""
-    arms = " ".join(
-        f"WHEN {u} < {t} THEN {k}" for k, t in enumerate(_POIS_THRESH)
-    )
-    return f"CASE {arms} ELSE {len(_POIS_THRESH)} END"
 
 
 @register(
@@ -374,7 +371,7 @@ def _pois_case_sql(u: str) -> str:
         ),
         rep AS (
             SELECT priority, b,
-                   {_pois_case_sql(
+                   {pois_case_sql(
                        "CAST('0x' || substr(md5(k || '#' || CAST(b AS VARCHAR)), 1, 4) AS BIGINT)"
                    )} AS w,
                    x
@@ -443,10 +440,7 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("bigint")
-    w = F.when(u < _POIS_THRESH[0], 0)
-    for idx, t in enumerate(_POIS_THRESH[1:], start=1):
-        w = w.when(u < t, idx)
-    w = w.otherwise(len(_POIS_THRESH))
+    w = pois_case(u)
     means = (
         base.join(F.broadcast(reps))
         .select("priority", "b", w.alias("w"), "x")
@@ -4015,4 +4009,4944 @@ def stat_hartley_fmax(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "f_max"
             ),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_dixon_q — single-outlier screen on bounded per-segment series
+
+
+@register(
+    "stat_dixon_q",
+    tags=("stats", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        mx AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n_days,
+                   MAX(x) AS xmax, MIN(x) AS xmin
+            FROM daily GROUP BY segment
+        ),
+        mx2 AS (
+            SELECT d.segment, MAX(d.x) AS xmax2
+            FROM daily d JOIN mx ON mx.segment = d.segment
+            WHERE d.x < mx.xmax
+            GROUP BY d.segment
+        )
+        SELECT mx.segment, mx.n_days,
+               CAST(CAST(mx.xmax - mx2.xmax2 AS VARCHAR) AS DOUBLE) AS gap,
+               CAST(CAST(mx.xmax - mx.xmin AS VARCHAR) AS DOUBLE) AS xrange,
+               CASE WHEN mx.xmax > mx.xmin THEN
+                 CAST(CAST(mx.xmax - mx2.xmax2 AS VARCHAR) AS DOUBLE)
+                   / CAST(CAST(mx.xmax - mx.xmin AS VARCHAR) AS DOUBLE)
+               END AS q_stat
+        FROM mx LEFT JOIN mx2 ON mx2.segment = mx.segment
+        ORDER BY mx.segment
+    """,
+)
+def stat_dixon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dixon's Q for the largest observation of each segment's daily
+    revenue series: Q = (x_(n) - x_(n-1)) / (x_(n) - x_(1)) — the
+    classical small-sample single-outlier screen (Dean & Dixon 1951),
+    here as a per-segment data-quality diagnostic. Max/min/second-max
+    are exact DECIMAL aggregates (second max = max of values strictly
+    below the max, one broadcast-joined second pass over the bounded
+    daily relation); differences stay decimal-exact and convert to
+    double once, via the VARCHAR route. Degenerate all-equal series
+    (range 0) NULL the statistic identically on both engines; a tied
+    maximum makes gap 0 (Q = 0), not NULL, matching the order-statistic
+    definition. Corpus-scale work is only the daily aggregation."""
+    daily = seg_daily(spark, sf_dir)
+    mx = daily.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        F.max("x").alias("xmax"),
+        F.min("x").alias("xmin"),
+    )
+    mx2 = (
+        daily.join(F.broadcast(mx.select("segment", "xmax")), "segment")
+        .filter(F.col("x") < F.col("xmax"))
+        .groupBy("segment")
+        .agg(F.max("x").alias("xmax2"))
+    )
+    gap = as_d(F.col("xmax") - F.col("xmax2"))
+    rng = as_d(F.col("xmax") - F.col("xmin"))
+    return (
+        mx.join(mx2, "segment", "left")
+        .select(
+            "segment",
+            "n_days",
+            gap.alias("gap"),
+            rng.alias("xrange"),
+            F.when(F.col("xmax") > F.col("xmin"), gap / rng).alias("q_stat"),
+        )
+        .orderBy("segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_mood_median_test — k-sample location test on counts above the
+# pooled median
+
+
+@register(
+    "stat_mood_median_test",
+    tags=("stats", "window", "agg"),
+    oracle="""
+        WITH cents AS (
+            SELECT o_orderpriority AS grp,
+                   CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS v
+            FROM orders
+        ),
+        per_val AS (
+            SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM cents GROUP BY v
+        ),
+        cum AS (
+            SELECT v, SUM(t) OVER (ORDER BY v) AS c,
+                   SUM(t) OVER () AS n
+            FROM per_val
+        ),
+        med AS (
+            SELECT CAST(MIN(n) AS BIGINT) AS n,
+                   CAST(MIN(CASE WHEN c >= (n + 1) // 2 THEN v END)
+                        AS BIGINT) AS med_v
+            FROM cum
+        ),
+        grp AS (
+            SELECT cents.grp,
+                   CAST(COUNT(*) AS BIGINT) AS n_g,
+                   CAST(SUM(CASE WHEN cents.v > med.med_v THEN 1 ELSE 0 END)
+                        AS BIGINT) AS a_g
+            FROM cents CROSS JOIN med
+            GROUP BY cents.grp
+        ),
+        tot AS (
+            SELECT CAST(SUM(n_g) AS BIGINT) AS n,
+                   CAST(SUM(a_g) AS BIGINT) AS a,
+                   CAST(COUNT(*) AS BIGINT) AS k
+            FROM grp
+        )
+        SELECT tot.n, tot.k, tot.a,
+               CAST(med.med_v AS DOUBLE) / 100 AS pooled_median,
+               CASE WHEN tot.a > 0 AND tot.a < tot.n THEN
+                 list_reduce(
+                     list(
+                         CAST(grp.a_g * tot.n - grp.n_g * tot.a AS DOUBLE)
+                           * CAST(grp.a_g * tot.n - grp.n_g * tot.a
+                                  AS DOUBLE)
+                           / (CAST(grp.n_g AS DOUBLE) * tot.a
+                              * (tot.n - tot.a))
+                         ORDER BY grp.grp),
+                     (acc, x) -> acc + x)
+               END AS chi2,
+               (tot.k - 1) AS df
+        FROM grp CROSS JOIN tot CROSS JOIN med
+        GROUP BY tot.n, tot.k, tot.a, med.med_v
+    """,
+)
+def stat_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mood's median test across the five order priorities: does each
+    priority class place the same share of orders above the POOLED
+    median price? The k-sample location test that stays valid under
+    wildly non-normal money distributions. The pooled lower median is
+    an exact order statistic (rank ceil(N/2)) found by bucket+carry
+    cumulative counts over the distinct-cents relation — no global
+    sort, no unpartitioned corpus window; above-median counts are one
+    grouped agg against the broadcast median. chi2 folds the k
+    per-group terms in PINNED group order (array_sort fold ==
+    list_reduce ORDER BY) since k doubles summed in engine order would
+    diverge 1 ulp; each term uses the exact-integer identity
+    (a_g*N - n_g*A)^2 / (n_g * A * B). Degenerate all-above/all-below
+    splits (A=0 or A=N) NULL the statistic on both engines."""
+    o = load_table(spark, sf_dir, "orders")
+    cents = o.select(
+        F.col("o_orderpriority").alias("grp"),
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("v"),
+    )
+    per_val = cents.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("t"))
+    # bucket+carry cumulative over distinct cents values
+    bkt = per_val.withColumn("bkt", F.floor(F.col("v") / F.lit(1000000)))
+    w_in = Window.partitionBy("bkt").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    within = bkt.select("bkt", "v", "t", F.sum("t").over(w_in).alias("wc"))
+    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    carry = (
+        bkt.groupBy("bkt")
+        .agg(F.sum("t").alias("tb"))
+        .select(
+            "bkt",
+            F.coalesce(F.sum("tb").over(w_carry), F.lit(0)).alias("cb"),
+        )
+    )
+    cum = within.join(F.broadcast(carry), "bkt").select(
+        "v", (F.col("wc") + F.col("cb")).alias("c")
+    )
+    n_tot = per_val.agg(F.sum("t").cast("bigint").alias("n"))
+    med = (
+        cum.crossJoin(F.broadcast(n_tot))
+        .agg(
+            F.min("n").cast("bigint").alias("n"),
+            F.min(
+                F.when(
+                    F.col("c") >= F.expr("CAST((n + 1) DIV 2 AS BIGINT)"),
+                    F.col("v"),
+                )
+            )
+            .cast("bigint")
+            .alias("med_v"),
+        )
+    )
+    grp = (
+        cents.crossJoin(F.broadcast(med))
+        .groupBy("grp")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_g"),
+            F.sum(F.when(F.col("v") > F.col("med_v"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("a_g"),
+        )
+    )
+    tot = grp.agg(
+        F.sum("n_g").cast("bigint").alias("n"),
+        F.sum("a_g").cast("bigint").alias("a"),
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+    )
+    # Difference exact in bigint; SQUARE in double (the bigint square
+    # would overflow past sf1 — a_g*n ~ 4.5e11 there, squared 2e23).
+    num = (
+        (F.col("a_g") * F.col("n") - F.col("n_g") * F.col("a"))
+    ).cast("double")
+    term = (num * num) / (
+        F.col("n_g").cast("double")
+        * F.col("a").cast("double")
+        * (F.col("n") - F.col("a")).cast("double")
+    )
+    return (
+        grp.crossJoin(F.broadcast(tot))
+        .crossJoin(F.broadcast(med.select(F.col("med_v"))))
+        .groupBy("n", "k", "a", "med_v")
+        .agg(ordered_fold_sum(F.col("grp"), term).alias("chi2_raw"))
+        .select(
+            "n",
+            "k",
+            "a",
+            (F.col("med_v").cast("double") / 100).alias("pooled_median"),
+            F.when(
+                (F.col("a") > 0) & (F.col("a") < F.col("n")),
+                F.col("chi2_raw"),
+            ).alias("chi2"),
+            (F.col("k") - 1).alias("df"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_cochran_q — k related binary outcomes
+
+
+@register(
+    "stat_cochran_q",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH x AS (
+            SELECT user_id, event_type, 1 AS f
+            FROM events GROUP BY user_id, event_type
+        ),
+        k AS (
+            SELECT CAST(COUNT(DISTINCT event_type) AS BIGINT) AS k
+            FROM events
+        ),
+        cols AS (
+            SELECT CAST(SUM(CAST(cj AS DECIMAL(38,0)) * cj) AS BIGINT)
+                       AS sum_cj2,
+                   CAST(SUM(cj) AS BIGINT) AS t
+            FROM (SELECT event_type, COUNT(*) AS cj FROM x GROUP BY event_type)
+        ),
+        rows_ AS (
+            SELECT CAST(SUM(CAST(ru AS DECIMAL(38,0)) * ru) AS BIGINT)
+                       AS sum_ru2,
+                   CAST(COUNT(*) AS BIGINT) AS n_users
+            FROM (SELECT user_id, COUNT(*) AS ru FROM x GROUP BY user_id)
+        )
+        SELECT k.k, rows_.n_users, cols.t,
+               CASE WHEN k.k * cols.t - rows_.sum_ru2 > 0 THEN
+                 CAST(k.k - 1 AS DOUBLE)
+                   * (CAST(k.k AS DOUBLE) * cols.sum_cj2
+                      - CAST(cols.t AS DOUBLE) * cols.t)
+                   / (CAST(k.k AS DOUBLE) * cols.t - rows_.sum_ru2)
+               END AS q_stat,
+               (k.k - 1) AS df
+        FROM k CROSS JOIN cols CROSS JOIN rows_
+    """,
+)
+def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cochran's Q across the event types: treating each USER as a
+    block and each event type as a treatment with the binary outcome
+    "did this user ever fire this event type", do the k types have
+    equal incidence? The k-sample extension of McNemar, and the
+    engagement-breadth test behind feature-adoption dashboards.
+    Q = (k-1) * (k*sum(C_j^2) - T^2) / (k*T - sum(R_u^2)) needs only
+    column totals (k values), row totals (one per user, map-side
+    combining agg) and their exact integer square sums — squares
+    accumulate in DECIMAL(38,0) so the sf1-scale user counts cannot
+    overflow the pre-cast sum. The degenerate all-rows-complete case
+    (every user fired every type: denominator 0) NULLs Q identically
+    on both engines. Blocks with all-zero rows never enter x and
+    cancel from Q algebraically, so the distinct-pair relation is the
+    full computation."""
+    e = load_table(spark, sf_dir, "events")
+    x = e.groupBy("user_id", "event_type").agg(F.lit(1).alias("f"))
+    k = e.agg(F.countDistinct("event_type").cast("bigint").alias("k"))
+    cj = x.groupBy("event_type").agg(F.count(F.lit(1)).alias("cj"))
+    cols = cj.agg(
+        F.sum(F.col("cj").cast("decimal(38,0)") * F.col("cj"))
+        .cast("bigint")
+        .alias("sum_cj2"),
+        F.sum("cj").cast("bigint").alias("t"),
+    )
+    ru = x.groupBy("user_id").agg(F.count(F.lit(1)).alias("ru"))
+    rows_ = ru.agg(
+        F.sum(F.col("ru").cast("decimal(38,0)") * F.col("ru"))
+        .cast("bigint")
+        .alias("sum_ru2"),
+        F.count(F.lit(1)).cast("bigint").alias("n_users"),
+    )
+    kd = F.col("k").cast("double")
+    td = F.col("t").cast("double")
+    return (
+        k.crossJoin(F.broadcast(cols))
+        .crossJoin(F.broadcast(rows_))
+        .select(
+            "k",
+            "n_users",
+            "t",
+            F.when(
+                F.col("k") * F.col("t") - F.col("sum_ru2") > 0,
+                (kd - 1)
+                * (kd * F.col("sum_cj2") - td * F.col("t"))
+                / (kd * F.col("t") - F.col("sum_ru2")),
+            ).alias("q_stat"),
+            (F.col("k") - 1).alias("df"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_bowker_test — symmetry of paired categorical outcomes
+
+
+@register(
+    "stat_bowker_test",
+    tags=("stats", "window", "agg"),
+    oracle="""
+        WITH pref AS (
+            SELECT o_custkey,
+                   EXTRACT(year FROM o_orderdate) AS yr,
+                   o_orderpriority AS p,
+                   COUNT(*) AS cnt
+            FROM orders
+            WHERE EXTRACT(year FROM o_orderdate) IN (1995, 1996)
+            GROUP BY 1, 2, 3
+        ),
+        modal AS (
+            SELECT o_custkey, yr, p FROM (
+                SELECT o_custkey, yr, p,
+                       ROW_NUMBER() OVER (PARTITION BY o_custkey, yr
+                                          ORDER BY cnt DESC, p) AS rn
+                FROM pref
+            ) WHERE rn = 1
+        ),
+        pairs AS (
+            SELECT a.p AS p95, b.p AS p96
+            FROM modal a JOIN modal b
+              ON a.o_custkey = b.o_custkey AND a.yr = 1995 AND b.yr = 1996
+        ),
+        cells AS (
+            SELECT p95, p96, CAST(COUNT(*) AS BIGINT) AS n
+            FROM pairs GROUP BY p95, p96
+        ),
+        offdiag AS (
+            SELECT LEAST(p95, p96) AS i, GREATEST(p95, p96) AS j,
+                   CAST(SUM(CASE WHEN p95 < p96 THEN n ELSE 0 END)
+                        AS BIGINT) AS nij,
+                   CAST(SUM(CASE WHEN p95 > p96 THEN n ELSE 0 END)
+                        AS BIGINT) AS nji
+            FROM cells WHERE p95 <> p96
+            GROUP BY 1, 2
+        )
+        SELECT CAST(SUM(nij + nji) AS BIGINT) AS n_discordant_pairs,
+               CAST(COUNT(*) AS BIGINT) AS df,
+               list_reduce(
+                   list(CAST((nij - nji) * (nij - nji) AS DOUBLE)
+                        / (nij + nji) ORDER BY i, j),
+                   (acc, x) -> acc + x) AS chi2
+        FROM offdiag
+        WHERE nij + nji > 0
+    """,
+)
+def stat_bowker_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bowker's symmetry test on the 5x5 transition table of each
+    customer's MODAL order priority, 1995 -> 1996: is the preference
+    migration symmetric, or is there a directed drift (the k-category
+    generalization of McNemar)? The modal priority per (customer,
+    year) uses the deterministic mode (count desc, priority asc
+    tiebreak) via a customer-partitioned row_number — corpus-scale but
+    partitioned; everything after the per-customer pair is a <=25-row
+    contingency relation. chi2 = sum over unordered off-diagonal pairs
+    of (n_ij - n_ji)^2 / (n_ij + n_ji), folded in PINNED (i, j) order;
+    zero-sum pairs are excluded (they contribute 0/0) and df counts
+    the pairs actually summed, per the classical definition. Rows-only
+    degenerate: a perfectly diagonal table leaves no off-diagonal
+    pairs — then the query returns an empty relation, which check.py
+    would flag; the fixture's mixed preferences guarantee non-empty
+    (documented, verified at all three SFs)."""
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.year("o_orderdate").isin(1995, 1996)
+    )
+    pref = o.groupBy(
+        "o_custkey",
+        F.year("o_orderdate").alias("yr"),
+        F.col("o_orderpriority").alias("p"),
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    w = Window.partitionBy("o_custkey", "yr").orderBy(
+        F.col("cnt").desc(), F.col("p")
+    )
+    modal = (
+        pref.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("o_custkey", "yr", "p")
+    )
+    a = modal.filter(F.col("yr") == 1995).select(
+        "o_custkey", F.col("p").alias("p95")
+    )
+    b = modal.filter(F.col("yr") == 1996).select(
+        "o_custkey", F.col("p").alias("p96")
+    )
+    cells = a.join(b, "o_custkey").groupBy("p95", "p96").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    # Fold BOTH orientations onto the unordered pair key so an
+    # (i, j) pair observed only as (j, i) still contributes its
+    # (0 - n_ji)^2 / n_ji term — a one-sided left join from the i<j
+    # cells would silently drop it.
+    offdiag = (
+        cells.filter(F.col("p95") != F.col("p96"))
+        .groupBy(
+            F.least("p95", "p96").alias("i"),
+            F.greatest("p95", "p96").alias("j"),
+        )
+        .agg(
+            F.sum(F.when(F.col("p95") < F.col("p96"), F.col("n")).otherwise(0))
+            .cast("bigint")
+            .alias("nij"),
+            F.sum(F.when(F.col("p95") > F.col("p96"), F.col("n")).otherwise(0))
+            .cast("bigint")
+            .alias("nji"),
+        )
+        .filter(F.col("nij") + F.col("nji") > 0)
+    )
+    term = ((F.col("nij") - F.col("nji")) * (F.col("nij") - F.col("nji"))).cast(
+        "double"
+    ) / (F.col("nij") + F.col("nji"))
+    return offdiag.agg(
+        F.sum(F.col("nij") + F.col("nji")).cast("bigint").alias(
+            "n_discordant_pairs"
+        ),
+        F.count(F.lit(1)).cast("bigint").alias("df"),
+        ordered_fold_sum(
+            F.concat(F.col("i"), F.lit("|"), F.col("j")), term
+        ).alias("chi2"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_ansari_bradley — two-sample scale (dispersion) test
+
+
+@register(
+    "stat_ansari_bradley",
+    tags=("stats", "window", "agg"),
+    oracle="""
+        WITH ts AS (
+            SELECT CAST(o_totalprice AS DECIMAL(12,2)) AS x,
+                   CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
+                       AS g
+            FROM orders
+            WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
+        ),
+        per_val AS (
+            SELECT x, CAST(SUM(g) AS BIGINT) AS a,
+                   CAST(SUM(1 - g) AS BIGINT) AS b
+            FROM ts GROUP BY x
+        ),
+        cum AS (
+            SELECT x, a, b,
+                   SUM(a + b) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING)
+                       AS cum_t
+            FROM per_val
+        ),
+        tot AS (
+            SELECT CAST(SUM(a) AS BIGINT) AS n1,
+                   CAST(SUM(b) AS BIGINT) AS n0,
+                   CAST(SUM(a + b) AS BIGINT) AS n
+            FROM per_val
+        ),
+        scored AS (
+            SELECT a, (a + b) AS t,
+                   LEAST(2 * cum_t - (a + b) + 1,
+                         2 * (tot.n + 1) - (2 * cum_t - (a + b) + 1)) AS s2
+            FROM cum CROSS JOIN tot
+        ),
+        s AS (
+            SELECT CAST(SUM(a * s2) AS BIGINT) AS ab2,
+                   CAST(SUM(CAST(t AS DECIMAL(38,0)) * s2) AS DECIMAL(38,0))
+                       AS sts2,
+                   CAST(SUM(CAST(t AS DECIMAL(38,0)) * s2 * s2)
+                        AS DECIMAL(38,0)) AS sts2sq
+            FROM scored
+        )
+        SELECT tot.n1, tot.n0,
+               CAST(s.ab2 AS DOUBLE) / 2 AS ab_stat,
+               CASE WHEN tot.n > 1 AND tot.n1 > 0 AND tot.n0 > 0 THEN
+                 (CAST(CAST(CAST(s.ab2 AS DECIMAL(38,0)) * tot.n
+                            - CAST(tot.n1 AS DECIMAL(38,0)) * s.sts2
+                        AS VARCHAR) AS DOUBLE) / (2 * CAST(tot.n AS DOUBLE)))
+                 / sqrt(CAST(tot.n1 AS DOUBLE) * tot.n0
+                        * CAST(CAST(CAST(tot.n AS DECIMAL(38,0)) * s.sts2sq
+                                    - s.sts2 * s.sts2
+                               AS VARCHAR) AS DOUBLE)
+                        / (4 * CAST(tot.n AS DOUBLE) * tot.n
+                           * (CAST(tot.n AS DOUBLE) - 1)))
+               END AS z_stat
+        FROM s CROSS JOIN tot
+    """,
+)
+def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ansari-Bradley two-sample SCALE test on URGENT-vs-LOW order
+    prices: are the two priority classes equally dispersed around a
+    common center? Scores fold the pooled ranks inward — s = min(r,
+    N+1-r) — so extreme observations get LOW scores and a small
+    group-1 score sum flags wider dispersion. Ties take the
+    score-of-midrank (documented definition: s2 = min(mr2,
+    2(N+1)-mr2) on doubled midranks, exact integers; this equals the
+    classical mean-of-scores for every tie block not spanning the
+    fold point). The z uses the EXACT finite-population moments of
+    the realized score multiset (tie-adjusted by construction):
+    Var(AB) = n1*n0*(N*Sum t*s^2 - (Sum t*s)^2) / (N^2 (N-1)), all
+    accumulated in DECIMAL(38,0) off the shared bucket+carry pooled
+    cumulative — no global sort, one distinct-value relation.
+    Class-5: z NULLs when either group is empty or N=1 (the fixture's
+    priority filter guarantees both populated; guarded anyway)."""
+    cum = _pooled_cumulative_ab(spark, sf_dir)
+    tot = cum.agg(
+        F.sum("a").cast("bigint").alias("n1"),
+        F.sum("b").cast("bigint").alias("n0"),
+        F.sum(F.col("a") + F.col("b")).cast("bigint").alias("n"),
+    )
+    scored = cum.crossJoin(F.broadcast(tot)).select(
+        "a",
+        (F.col("a") + F.col("b")).alias("t"),
+        F.least(
+            2 * F.col("cum_t") - (F.col("a") + F.col("b")) + 1,
+            2 * (F.col("n") + 1)
+            - (2 * F.col("cum_t") - (F.col("a") + F.col("b")) + 1),
+        ).alias("s2"),
+    )
+    s = scored.agg(
+        F.sum(F.col("a") * F.col("s2")).cast("bigint").alias("ab2"),
+        F.sum(F.col("t").cast("decimal(38,0)") * F.col("s2"))
+        .cast("decimal(38,0)")
+        .alias("sts2"),
+        F.sum(F.col("t").cast("decimal(38,0)") * F.col("s2") * F.col("s2"))
+        .cast("decimal(38,0)")
+        .alias("sts2sq"),
+    )
+    n_d = F.col("n").cast("double")
+    num = as_d(
+        F.col("ab2").cast("decimal(38,0)") * F.col("n")
+        - F.col("n1").cast("decimal(38,0)") * F.col("sts2")
+    ) / (2 * n_d)
+    var = (
+        F.col("n1").cast("double")
+        * F.col("n0")
+        * as_d(
+            F.col("n").cast("decimal(38,0)") * F.col("sts2sq")
+            - F.col("sts2") * F.col("sts2")
+        )
+        / (4 * n_d * F.col("n") * (n_d - 1))
+    )
+    return s.crossJoin(F.broadcast(tot)).select(
+        "n1",
+        "n0",
+        (F.col("ab2").cast("double") / 2).alias("ab_stat"),
+        F.when(
+            (F.col("n") > 1) & (F.col("n1") > 0) & (F.col("n0") > 0),
+            num / F.sqrt(var),
+        ).alias("z_stat"),
+    )
+
+
+def _pooled_cumulative_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(x, a, b, cum_a, cum_b, cum_t): URGENT-vs-LOW distinct-price
+    counts with INCLUSIVE per-group and pooled cumulatives, bucket +
+    carry (no corpus-scale unpartitioned window). Shared by the
+    Ansari-Bradley, Anderson-Darling and Brunner-Munzel rank tests."""
+    o = load_table(spark, sf_dir, "orders")
+    ts = o.filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW")).select(
+        F.col("o_totalprice").cast("decimal(12,2)").alias("x"),
+        F.when(F.col("o_orderpriority") == "1-URGENT", 1)
+        .otherwise(0)
+        .alias("g"),
+    )
+    per_val = ts.groupBy("x").agg(
+        F.sum("g").cast("bigint").alias("a"),
+        F.sum(F.lit(1) - F.col("g")).cast("bigint").alias("b"),
+    )
+    per_val = per_val.withColumn(
+        "bkt", F.floor(F.col("x") / F.lit(10000)).cast("long")
+    ).persist()
+    w_in = (
+        Window.partitionBy("bkt")
+        .orderBy("x")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    within = per_val.select(
+        "bkt", "x", "a", "b",
+        F.sum("a").over(w_in).alias("wa"),
+        F.sum("b").over(w_in).alias("wb"),
+    )
+    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    carry = (
+        per_val.groupBy("bkt")
+        .agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
+        .select(
+            "bkt",
+            F.coalesce(F.sum("ta").over(w_carry), F.lit(0)).alias("ca"),
+            F.coalesce(F.sum("tb").over(w_carry), F.lit(0)).alias("cb"),
+        )
+    )
+    return within.join(F.broadcast(carry), "bkt").select(
+        "x",
+        "a",
+        "b",
+        (F.col("wa") + F.col("ca")).alias("cum_a"),
+        (F.col("wb") + F.col("cb")).alias("cum_b"),
+        (F.col("wa") + F.col("ca") + F.col("wb") + F.col("cb")).alias(
+            "cum_t"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_page_trend — ordered-alternative trend across treatments
+
+
+@register(
+    "stat_page_trend",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH daily AS ({DAILY_SCALED_SQL}),
+        ranked AS (
+            SELECT event_type, day,
+                   2 * (RANK() OVER (PARTITION BY day ORDER BY v))
+                     + (COUNT(*) OVER (PARTITION BY day, v)) - 1 AS mr2
+            FROM daily
+        ),
+        tj AS (
+            SELECT event_type,
+                   ROW_NUMBER() OVER (ORDER BY event_type) AS j
+            FROM (SELECT DISTINCT event_type FROM daily)
+        ),
+        rj AS (
+            SELECT r.event_type, tj.j,
+                   CAST(COUNT(*) AS BIGINT) AS nb,
+                   CAST(SUM(r.mr2) AS BIGINT) AS r2j
+            FROM ranked r JOIN tj ON tj.event_type = r.event_type
+            GROUP BY 1, 2
+        ),
+        dims AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS k,
+                   CAST(MIN(nb) AS BIGINT) AS n,
+                   CAST(MAX(nb) AS BIGINT) AS mx,
+                   CAST(SUM(j * r2j) AS BIGINT) AS l2
+            FROM rj
+        )
+        SELECT k, n,
+               CAST(l2 AS DOUBLE) / 2 AS page_l,
+               CASE WHEN n = mx AND k > 1 THEN
+                 (CAST(l2 AS DOUBLE) / 2
+                  - CAST(n AS DOUBLE) * k * (k + 1) * (k + 1) / 4)
+                 / sqrt(CAST(n AS DOUBLE) * k * k * (k + 1) * (k + 1)
+                        * (k - 1) / 144)
+               END AS z_stat
+        FROM dims
+    """,
+)
+def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Page's trend test for ordered alternatives across the five
+    event streams: with each DAY a block and treatments ordered
+    alphabetically by type, L = sum_j j * R_j rises when activity
+    level increases monotonically along the treatment order — the
+    rank test that detects a TREND Friedman's omnibus Q dilutes.
+    Within-day doubled midranks reuse the Friedman machinery (k rows
+    per day partition, embarrassingly parallel); the treatment index
+    comes from a k-row ranked relation; L and the per-treatment rank
+    sums are exact integers, halved once at the edge. z uses the
+    classical no-tie moments E[L] = nk(k+1)^2/4, Var[L] =
+    nk^2(k+1)^2(k-1)/144 (Page 1963; midranks keep L well-defined
+    under ties, documented approximation). Complete-block guard as in
+    stat_friedman_test: unequal block counts NULL the z identically
+    on both engines."""
+    daily = daily_scaled(spark, sf_dir)
+    wd = Window.partitionBy("day").orderBy("v")
+    wt = Window.partitionBy("day", "v")
+    ranked = daily.select(
+        "event_type",
+        (2 * F.rank().over(wd) + F.count(F.lit(1)).over(wt) - 1).alias("mr2"),
+    )
+    types = daily.select("event_type").distinct()
+    wj = Window.orderBy("event_type")  # k rows — bounded by type domain
+    tj = types.select("event_type", F.row_number().over(wj).alias("j"))
+    rj = (
+        ranked.join(F.broadcast(tj), "event_type")
+        .groupBy("event_type", "j")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("nb"),
+            F.sum("mr2").cast("bigint").alias("r2j"),
+        )
+    )
+    dims = rj.agg(
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.min("nb").cast("bigint").alias("n"),
+        F.max("nb").cast("bigint").alias("mx"),
+        F.sum(F.col("j") * F.col("r2j")).cast("bigint").alias("l2"),
+    )
+    k_d = F.col("k").cast("double")
+    n_d = F.col("n").cast("double")
+    mu = n_d * k_d * (k_d + 1) * (k_d + 1) / 4
+    var = n_d * k_d * k_d * (k_d + 1) * (k_d + 1) * (k_d - 1) / 144
+    return dims.select(
+        "k",
+        "n",
+        (F.col("l2").cast("double") / 2).alias("page_l"),
+        F.when(
+            (F.col("n") == F.col("mx")) & (F.col("k") > 1),
+            (F.col("l2").cast("double") / 2 - mu) / F.sqrt(var),
+        ).alias("z_stat"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_anderson_darling_2s — integral ECDF test, tail-weighted
+
+_AB_SAMPLE_SQL = """
+            SELECT CAST(o_totalprice AS DECIMAL(12,2)) AS x,
+                   CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
+                       AS g
+            FROM orders
+            WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
+"""
+
+
+@register(
+    "stat_anderson_darling_2s",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH ts AS ({_AB_SAMPLE_SQL}),
+        per_val AS (
+            SELECT x, CAST(SUM(g) AS BIGINT) AS a,
+                   CAST(SUM(1 - g) AS BIGINT) AS b
+            FROM ts GROUP BY x
+        ),
+        cum AS (
+            SELECT x, a, b,
+                   SUM(a) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS cum_a,
+                   SUM(a + b) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING)
+                       AS cum_t
+            FROM per_val
+        ),
+        tot AS (
+            SELECT CAST(SUM(a) AS BIGINT) AS n,
+                   CAST(SUM(b) AS BIGINT) AS m,
+                   CAST(SUM(a + b) AS BIGINT) AS nt
+            FROM per_val
+        ),
+        terms AS (
+            SELECT (a + b) *
+                   CAST(CAST(CAST(CAST(cum_a * tot.nt - tot.n * cum_t
+                                       AS DECIMAL(19,0))
+                                  * CAST(cum_a * tot.nt - tot.n * cum_t
+                                         AS DECIMAL(19,0)) AS DECIMAL(38,0))
+                        AS VARCHAR) AS DOUBLE)
+                     / (CAST(cum_t AS DOUBLE) * (tot.nt - cum_t)) AS ratio
+            FROM cum CROSS JOIN tot
+            WHERE cum_t < tot.nt
+        ),
+        s AS (
+            SELECT {o_fsum('ratio')} AS sq
+            FROM terms
+        )
+        SELECT tot.n, tot.m,
+               s.sq / (CAST(tot.n AS DOUBLE) * CAST(tot.m AS DOUBLE))
+                   AS ad_stat
+        FROM s CROSS JOIN tot
+    """,
+)
+def stat_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample Anderson-Darling statistic on the URGENT-vs-LOW
+    pooled price sample — the TAIL-WEIGHTED sibling of stat_ks (sup)
+    and stat_cvm (integral): A2 = (1/(nm)) * sum over distinct pooled
+    values below the top of t_v * (M_v*N - n*B_v)^2 / (B_v*(N - B_v))
+    (Pettitt 1976 discrete form; midrank-consistent under ties). The
+    gap numerator is an exact integer off the shared bucket+carry
+    cumulative, squared in width-pinned DECIMAL (19,0)^2 -> (38,0)
+    then VARCHAR-routed to double ONCE per distinct value; the
+    tail weight 1/(B(N-B)) makes the per-value terms unequal, so the
+    reduction floor-quantizes each double ratio at 1e6 and sums EXACT
+    DECIMAL(38,0) (the o_fsum recipe — engine-order-free by
+    construction, quantization error <= rows*1e-6/(nm)). The B=N top
+    row is excluded on both engines (0/0 by construction); n,m >= 1
+    by the fixture's priority contract."""
+    cum = _pooled_cumulative_ab(spark, sf_dir)
+    tot = cum.agg(
+        F.sum("a").cast("bigint").alias("n"),
+        F.sum("b").cast("bigint").alias("m"),
+        F.sum(F.col("a") + F.col("b")).cast("bigint").alias("nt"),
+    )
+    gap = (
+        F.col("cum_a") * F.col("nt") - F.col("n") * F.col("cum_t")
+    ).cast("decimal(19,0)")
+    ratio = (
+        (F.col("a") + F.col("b"))
+        * as_d((gap * gap).cast("decimal(38,0)"))
+        / (F.col("cum_t").cast("double") * (F.col("nt") - F.col("cum_t")))
+    )
+    terms = (
+        cum.crossJoin(F.broadcast(tot))
+        .filter(F.col("cum_t") < F.col("nt"))
+        .select(ratio.alias("ratio"))
+    )
+    s = terms.agg(fsum(F.col("ratio")).alias("sq"))
+    return s.crossJoin(F.broadcast(tot)).select(
+        "n",
+        "m",
+        (
+            F.col("sq")
+            / (F.col("n").cast("double") * F.col("m").cast("double"))
+        ).alias("ad_stat"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_brunner_munzel — rank-based Behrens-Fisher test
+
+
+@register(
+    "stat_brunner_munzel",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH ts AS ({_AB_SAMPLE_SQL}),
+        per_val AS (
+            SELECT x, CAST(SUM(g) AS BIGINT) AS a,
+                   CAST(SUM(1 - g) AS BIGINT) AS b
+            FROM ts GROUP BY x
+        ),
+        cum AS (
+            SELECT x, a, b,
+                   SUM(a) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS cum_a,
+                   SUM(b) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS cum_b,
+                   SUM(a + b) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING)
+                       AS cum_t
+            FROM per_val
+        ),
+        tot AS (
+            SELECT CAST(SUM(a) AS BIGINT) AS n1,
+                   CAST(SUM(b) AS BIGINT) AS n0
+            FROM per_val
+        ),
+        dev AS (
+            SELECT a, b,
+                   (2 * cum_t - (a + b) + 1) AS mr2p,
+                   (2 * cum_t - (a + b) + 1) - (2 * cum_a - a + 1) AS d1,
+                   (2 * cum_t - (a + b) + 1) - (2 * cum_b - b + 1) AS d0
+            FROM cum
+        ),
+        s AS (
+            SELECT CAST(SUM(a * CAST(mr2p AS DECIMAL(38,0)))
+                        AS DECIMAL(38,0)) AS r2sum1,
+                   CAST(SUM(b * CAST(mr2p AS DECIMAL(38,0)))
+                        AS DECIMAL(38,0)) AS r2sum0,
+                   CAST(SUM(a * CAST(d1 AS DECIMAL(38,0))) AS DECIMAL(38,0))
+                       AS s1,
+                   CAST(SUM(b * CAST(d0 AS DECIMAL(38,0))) AS DECIMAL(38,0))
+                       AS s0,
+                   CAST(SUM(a * CAST(d1 AS DECIMAL(38,0)) * d1)
+                        AS DECIMAL(38,0)) AS q1,
+                   CAST(SUM(b * CAST(d0 AS DECIMAL(38,0)) * d0)
+                        AS DECIMAL(38,0)) AS q0
+            FROM dev
+        )
+        SELECT tot.n1, tot.n0,
+               (CAST(CAST(s.r2sum0 AS VARCHAR) AS DOUBLE)
+                  / (2 * CAST(tot.n0 AS DOUBLE))
+                - (CAST(tot.n0 AS DOUBLE) + 1) / 2) / tot.n1 AS p_hat,
+               CASE WHEN tot.n1 > 1 AND tot.n0 > 1
+                         AND (CAST(tot.n1 AS DOUBLE)
+                              * (CAST(CAST(s.q1 * tot.n1 - s.s1 * s.s1
+                                      AS VARCHAR) AS DOUBLE)
+                                 / (4.0 * tot.n1 * (tot.n1 - 1)))
+                              + CAST(tot.n0 AS DOUBLE)
+                              * (CAST(CAST(s.q0 * tot.n0 - s.s0 * s.s0
+                                      AS VARCHAR) AS DOUBLE)
+                                 / (4.0 * tot.n0 * (tot.n0 - 1))))
+                             > 0 THEN
+                 CAST(tot.n1 AS DOUBLE) * tot.n0
+                   * (CAST(CAST(s.r2sum0 AS VARCHAR) AS DOUBLE)
+                        / (2 * CAST(tot.n0 AS DOUBLE))
+                      - CAST(CAST(s.r2sum1 AS VARCHAR) AS DOUBLE)
+                        / (2 * CAST(tot.n1 AS DOUBLE)))
+                   / (CAST(tot.n1 AS DOUBLE) + tot.n0)
+                   / sqrt(CAST(tot.n1 AS DOUBLE)
+                          * (CAST(CAST(s.q1 * tot.n1 - s.s1 * s.s1
+                                  AS VARCHAR) AS DOUBLE)
+                             / (4.0 * tot.n1 * (tot.n1 - 1)))
+                          + CAST(tot.n0 AS DOUBLE)
+                          * (CAST(CAST(s.q0 * tot.n0 - s.s0 * s.s0
+                                  AS VARCHAR) AS DOUBLE)
+                             / (4.0 * tot.n0 * (tot.n0 - 1))))
+               END AS bm_stat
+        FROM s CROSS JOIN tot
+    """,
+)
+def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brunner-Munzel rank test (the nonparametric Behrens-Fisher
+    problem) on URGENT-vs-LOW prices: tests P(X < Y) + P(X = Y)/2 =
+    1/2 WITHOUT assuming equal variances — the modern replacement for
+    Mann-Whitney when dispersions differ. Everything reduces to exact
+    integers on the distinct-value relation: pooled doubled midranks
+    mr2p = 2*cum_t - t + 1, within-group doubled midranks from the
+    per-group cumulatives, and the deviation sums S_i = sum
+    cnt*(mr2p - mr2own), Q_i = sum cnt*(...)^2 in DECIMAL(38,0). The
+    rank variances S_i^2 = (Q_i*n_i - S_i^2)/(4 n_i^2 (n_i-1)) and
+    the scipy-consistent statistic W = n1*n0*(Rbar0 - Rbar1)/((n1+n0)
+    * sqrt(n1*S1^2 + n0*S0^2)) take doubles only at the edge (VARCHAR
+    route). p_hat = (Rbar0 - (n0+1)/2)/n1 estimates P(URGENT < LOW) +
+    ties/2. Guards: W NULLs when either group has < 2 observations or
+    both rank variances are 0 (identical constant samples)."""
+    cum = _pooled_cumulative_ab(spark, sf_dir)
+    tot = cum.agg(
+        F.sum("a").cast("bigint").alias("n1"),
+        F.sum("b").cast("bigint").alias("n0"),
+    )
+    t_v = F.col("a") + F.col("b")
+    mr2p = 2 * F.col("cum_t") - t_v + 1
+    d1 = mr2p - (2 * F.col("cum_a") - F.col("a") + 1)
+    d0 = mr2p - (2 * F.col("cum_b") - F.col("b") + 1)
+    dev = cum.select(
+        "a",
+        "b",
+        mr2p.alias("mr2p"),
+        d1.alias("d1"),
+        d0.alias("d0"),
+    )
+    s = dev.agg(
+        F.sum(F.col("a") * F.col("mr2p").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("r2sum1"),
+        F.sum(F.col("b") * F.col("mr2p").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("r2sum0"),
+        F.sum(F.col("a") * F.col("d1").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("s1"),
+        F.sum(F.col("b") * F.col("d0").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("s0"),
+        F.sum(F.col("a") * F.col("d1").cast("decimal(38,0)") * F.col("d1"))
+        .cast("decimal(38,0)")
+        .alias("q1"),
+        F.sum(F.col("b") * F.col("d0").cast("decimal(38,0)") * F.col("d0"))
+        .cast("decimal(38,0)")
+        .alias("q0"),
+    )
+    n1d = F.col("n1").cast("double")
+    n0d = F.col("n0").cast("double")
+    rbar1 = as_d(F.col("r2sum1")) / (2 * n1d)
+    rbar0 = as_d(F.col("r2sum0")) / (2 * n0d)
+    var1 = as_d(F.col("q1") * F.col("n1") - F.col("s1") * F.col("s1")) / (
+        F.lit(4.0) * F.col("n1") * (F.col("n1") - 1)
+    )
+    var0 = as_d(F.col("q0") * F.col("n0") - F.col("s0") * F.col("s0")) / (
+        F.lit(4.0) * F.col("n0") * (F.col("n0") - 1)
+    )
+    denom = n1d * var1 + n0d * var0
+    return s.crossJoin(F.broadcast(tot)).select(
+        "n1",
+        "n0",
+        ((rbar0 - (n0d + 1) / 2) / F.col("n1")).alias("p_hat"),
+        F.when(
+            (F.col("n1") > 1) & (F.col("n0") > 1) & (denom > 0),
+            n1d * F.col("n0") * (rbar0 - rbar1) / (n1d + F.col("n0"))
+            / F.sqrt(denom),
+        ).alias("bm_stat"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_jonckheere_terpstra — ordered-alternative k-sample test
+
+
+def _jt_pair_sql() -> str:
+    terms = []
+    for g in range(1, 6):
+        for h in range(g + 1, 6):
+            terms.append(
+                f"(2 * c{h} * (cc{g} - c{g}) + c{h} * c{g})"
+            )
+    return " + ".join(terms)
+
+
+@register(
+    "stat_jonckheere_terpstra",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH cents AS (
+            SELECT o_orderpriority AS grp,
+                   CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS v
+            FROM orders
+        ),
+        pv AS (
+            SELECT v,
+                   {", ".join(
+                       f"CAST(SUM(CASE WHEN grp = '{p}' THEN 1 ELSE 0 END) "
+                       f"AS BIGINT) AS c{i}"
+                       for i, p in enumerate(ORDER_PRIORITIES, start=1)
+                   )}
+            FROM cents GROUP BY v
+        ),
+        cum AS (
+            SELECT v,
+                   {", ".join(f"c{i}" for i in range(1, 6))},
+                   {", ".join(
+                       f"SUM(c{i}) OVER (ORDER BY v ROWS UNBOUNDED "
+                       f"PRECEDING) AS cc{i}"
+                       for i in range(1, 6)
+                   )}
+            FROM pv
+        ),
+        jt AS (
+            SELECT CAST(SUM({_jt_pair_sql()}) AS BIGINT) AS jt2
+            FROM cum
+        ),
+        sizes AS (
+            SELECT CAST(SUM({" + ".join(f"c{i}" for i in range(1, 6))})
+                        AS BIGINT) AS n,
+                   {", ".join(
+                       f"CAST(SUM(c{i}) AS BIGINT) AS n{i}"
+                       for i in range(1, 6)
+                   )}
+            FROM pv
+        ),
+        mom AS (
+            SELECT n,
+                   CAST(CAST(n AS DECIMAL(38,0)) * n
+                        - ({" + ".join(
+                               f"CAST(n{i} AS DECIMAL(38,0)) * n{i}"
+                               for i in range(1, 6)
+                           )}) AS DECIMAL(38,0)) AS e2_num,
+                   CAST(CAST(n AS DECIMAL(38,0)) * n * (2 * n + 3)
+                        - ({" + ".join(
+                            f"CAST(n{i} AS DECIMAL(38,0)) * n{i} "
+                            f"* (2 * n{i} + 3)"
+                            for i in range(1, 6)
+                        )}) AS DECIMAL(38,0)) AS var72
+            FROM sizes
+        )
+        SELECT mom.n,
+               CAST(jt.jt2 AS DOUBLE) / 2 AS jt_u,
+               CASE WHEN mom.var72 > 0 THEN
+                 (CAST(jt.jt2 AS DOUBLE)
+                  - CAST(CAST(mom.e2_num AS VARCHAR) AS DOUBLE) / 2)
+                 / (2 * sqrt(CAST(CAST(mom.var72 AS VARCHAR) AS DOUBLE)
+                             / 72))
+               END AS z_stat
+        FROM jt CROSS JOIN mom
+    """,
+)
+def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jonckheere-Terpstra test for an ORDERED alternative across the
+    five order priorities (1-URGENT < ... < 5-LOW): do prices trend
+    monotonically with declining urgency? JT = sum over group pairs
+    g < h of the Mann-Whitney count #{x_g < x_h} (+ ties/2) — more
+    powerful than Kruskal-Wallis when the alternative is a trend. The
+    2-scaled statistic is one exact integer pass over the distinct-
+    cents relation: per value, the 10 pair terms combine the per-group
+    counts c_g with EXCLUSIVE per-group cumulatives (from bucket+carry
+    inclusive cumulatives), i.e. 2*JT = sum_v sum_(g<h) (2 c_h (C_g -
+    c_g) + c_h c_g). Moments E[2JT] = (N^2 - sum n_g^2)/2 and 72*Var =
+    N^2(2N+3) - sum n_g^2(2n_g+3) (no-tie form, Jonckheere 1954;
+    midtie halves keep JT well-defined) accumulate in DECIMAL(38,0) —
+    N^2(2N+3) ~ 7e18 already at sf1, past bigint at sf10. z NULLs on
+    zero variance (all data in one group)."""
+    o = load_table(spark, sf_dir, "orders")
+    cents = o.select(
+        F.col("o_orderpriority").alias("grp"),
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("v"),
+    )
+    pv = cents.groupBy("v").agg(
+        *[
+            F.sum(F.when(F.col("grp") == p, 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"c{i}")
+            for i, p in enumerate(ORDER_PRIORITIES, start=1)
+        ]
+    )
+    bkt = pv.withColumn("bkt", F.floor(F.col("v") / F.lit(1000000)))
+    w_in = Window.partitionBy("bkt").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    within = bkt.select(
+        "bkt",
+        "v",
+        *[F.col(f"c{i}") for i in range(1, 6)],
+        *[F.sum(f"c{i}").over(w_in).alias(f"w{i}") for i in range(1, 6)],
+    )
+    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    carry = (
+        bkt.groupBy("bkt")
+        .agg(*[F.sum(f"c{i}").alias(f"t{i}") for i in range(1, 6)])
+        .select(
+            "bkt",
+            *[
+                F.coalesce(F.sum(f"t{i}").over(w_carry), F.lit(0)).alias(
+                    f"k{i}"
+                )
+                for i in range(1, 6)
+            ],
+        )
+    )
+    cum = within.join(F.broadcast(carry), "bkt").select(
+        "v",
+        *[F.col(f"c{i}") for i in range(1, 6)],
+        *[
+            (F.col(f"w{i}") + F.col(f"k{i}")).alias(f"cc{i}")
+            for i in range(1, 6)
+        ],
+    )
+    pair_term = None
+    for g in range(1, 6):
+        for h in range(g + 1, 6):
+            t = 2 * F.col(f"c{h}") * (F.col(f"cc{g}") - F.col(f"c{g}")) + F.col(
+                f"c{h}"
+            ) * F.col(f"c{g}")
+            pair_term = t if pair_term is None else pair_term + t
+    jt = cum.agg(F.sum(pair_term).cast("bigint").alias("jt2"))
+    sizes = pv.agg(
+        F.sum(sum(F.col(f"c{i}") for i in range(1, 6)))
+        .cast("bigint")
+        .alias("n"),
+        *[
+            F.sum(f"c{i}").cast("bigint").alias(f"n{i}")
+            for i in range(1, 6)
+        ],
+    )
+    nD = F.col("n").cast("decimal(38,0)")
+    e2_num = (nD * F.col("n")) - sum(
+        F.col(f"n{i}").cast("decimal(38,0)") * F.col(f"n{i}")
+        for i in range(1, 6)
+    )
+    var72 = (nD * F.col("n") * (2 * F.col("n") + 3)) - sum(
+        F.col(f"n{i}").cast("decimal(38,0)")
+        * F.col(f"n{i}")
+        * (2 * F.col(f"n{i}") + 3)
+        for i in range(1, 6)
+    )
+    mom = sizes.select(
+        "n",
+        e2_num.cast("decimal(38,0)").alias("e2_num"),
+        var72.cast("decimal(38,0)").alias("var72"),
+    )
+    return jt.crossJoin(F.broadcast(mom)).select(
+        "n",
+        (F.col("jt2").cast("double") / 2).alias("jt_u"),
+        F.when(
+            F.col("var72") > 0,
+            (F.col("jt2").cast("double") - as_d(F.col("e2_num")) / 2)
+            / (2 * F.sqrt(as_d(F.col("var72")) / 72)),
+        ).alias("z_stat"),
+    )
+
+
+@register(
+    "stat_conover_squared_ranks",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        cents AS (
+            SELECT segment, d,
+                   CAST(x * 100 AS BIGINT) AS v
+            FROM daily
+        ),
+        rn AS (
+            SELECT segment, v,
+                   ROW_NUMBER() OVER (PARTITION BY segment ORDER BY v)
+                       AS rnk,
+                   COUNT(*) OVER (PARTITION BY segment) AS n_g
+            FROM cents
+        ),
+        med AS (
+            SELECT segment,
+                   CAST(MIN(CASE WHEN rnk = (n_g + 1) // 2 THEN v END)
+                        AS BIGINT) AS med_v
+            FROM rn GROUP BY segment
+        ),
+        dev AS (
+            SELECT c.segment, ABS(c.v - med.med_v) AS a
+            FROM cents c JOIN med ON med.segment = c.segment
+        ),
+        u AS (
+            SELECT segment,
+                   2 * (RANK() OVER (ORDER BY a))
+                     + (COUNT(*) OVER (PARTITION BY a)) - 1 AS u
+            FROM dev
+        ),
+        g AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n_g,
+                   CAST(SUM(CAST(u AS DECIMAL(15,0)) * u) AS DECIMAL(38,0))
+                       AS s_g,
+                   CAST(SUM(CAST(CAST(u AS DECIMAL(15,0)) * u
+                                 AS DECIMAL(15,0))
+                            * CAST(CAST(u AS DECIMAL(15,0)) * u
+                                   AS DECIMAL(15,0)))
+                        AS DECIMAL(38,0)) AS s4_g
+            FROM u GROUP BY segment
+        ),
+        tot AS (
+            SELECT CAST(SUM(n_g) AS BIGINT) AS n,
+                   CAST(COUNT(*) AS BIGINT) AS k,
+                   CAST(CAST(SUM(s_g) AS VARCHAR) AS DOUBLE) AS ss,
+                   CAST(CAST(SUM(s4_g) AS VARCHAR) AS DOUBLE) AS s4
+            FROM g
+        )
+        SELECT tot.n AS n_days, tot.k, (tot.k - 1) AS df,
+               CASE WHEN tot.s4 - tot.ss * tot.ss / CAST(tot.n AS DOUBLE)
+                         > 0 THEN
+                 (CAST(tot.n AS DOUBLE) - 1)
+                 * (list_reduce(
+                        list(CAST(CAST(g.s_g AS VARCHAR) AS DOUBLE)
+                             * CAST(CAST(g.s_g AS VARCHAR) AS DOUBLE)
+                             / CAST(g.n_g AS DOUBLE)
+                             ORDER BY g.segment),
+                        (acc, x) -> acc + x)
+                    - tot.ss * tot.ss / CAST(tot.n AS DOUBLE))
+                 / (tot.s4 - tot.ss * tot.ss / CAST(tot.n AS DOUBLE))
+               END AS t_stat
+        FROM g CROSS JOIN tot
+        GROUP BY tot.n, tot.k, tot.ss, tot.s4
+    """,
+)
+def stat_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Conover squared-ranks test for equal SCALE across the five
+    segments' daily revenue series (the rank-based Levene alternative
+    that needs no normality): deviations are |x - segment lower
+    median| in exact integer cents (the median is an exact order
+    statistic at rank ceil(n/2) from a per-segment row_number window),
+    pooled midranks use the doubled-midrank identity u = 2*rank +
+    ties - 1 so every rank is an exact integer, and the squared-rank
+    sums S_g = sum(u^2) / fourth-moment sum(u^4) accumulate in exact
+    DECIMAL(38,0). T = (N-1)(sum_g S_g^2/n_g - S^2/N)/(sum u^4 - S^2/N)
+    assembles once at the double edge, folding the k=5 per-group terms
+    in PINNED segment order (S_g <= 4N^3 ~ 7e12 at the calendar-bounded
+    N, exact in a double before squaring). The pooled rank window is
+    unpartitioned but rides the calendar-bounded daily relation (~5
+    segments x days), never the corpus — the documented bucket+carry
+    exemption. Degenerate all-deviations-equal input (u^4 sum ==
+    S^2/N) NULLs t_stat identically on both engines."""
+    daily = seg_daily(spark, sf_dir)
+    cents = daily.select(
+        "segment", "d", (F.col("x") * 100).cast("bigint").alias("v")
+    )
+    w_rn = Window.partitionBy("segment").orderBy("v")
+    w_ng = Window.partitionBy("segment")
+    rn = cents.select(
+        "segment",
+        "v",
+        F.row_number().over(w_rn).alias("rnk"),
+        F.count(F.lit(1)).over(w_ng).alias("n_g"),
+    )
+    med = rn.groupBy("segment").agg(
+        F.min(
+            F.when(
+                F.col("rnk") == F.expr("CAST((n_g + 1) DIV 2 AS BIGINT)"),
+                F.col("v"),
+            )
+        )
+        .cast("bigint")
+        .alias("med_v")
+    )
+    dev = cents.join(F.broadcast(med), "segment").select(
+        "segment", F.abs(F.col("v") - F.col("med_v")).alias("a")
+    )
+    w_r = Window.orderBy("a")
+    w_t = Window.partitionBy("a")
+    u = dev.select(
+        "segment",
+        (
+            2 * F.rank().over(w_r) + F.count(F.lit(1)).over(w_t) - 1
+        ).alias("u"),
+    )
+    usq = (F.col("u").cast("decimal(15,0)") * F.col("u")).cast(
+        "decimal(15,0)"
+    )
+    g = u.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_g"),
+        F.sum(usq).cast("decimal(38,0)").alias("s_g"),
+        F.sum(usq * usq).cast("decimal(38,0)").alias("s4_g"),
+    )
+    tot = g.agg(
+        F.sum("n_g").cast("bigint").alias("n"),
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        as_d(F.sum("s_g").cast("decimal(38,0)")).alias("ss"),
+        as_d(F.sum("s4_g").cast("decimal(38,0)")).alias("s4"),
+    )
+    n_d = F.col("n").cast("double")
+    mean_sq = F.col("ss") * F.col("ss") / n_d
+    term = (
+        as_d(F.col("s_g")) * as_d(F.col("s_g")) / F.col("n_g").cast("double")
+    )
+    return (
+        g.crossJoin(F.broadcast(tot))
+        .groupBy("n", "k", "ss", "s4")
+        .agg(ordered_fold_sum(F.col("segment"), term).alias("num_raw"))
+        .select(
+            F.col("n").alias("n_days"),
+            "k",
+            (F.col("k") - 1).alias("df"),
+            F.when(
+                F.col("s4") - mean_sq > 0,
+                (n_d - 1)
+                * (F.col("num_raw") - mean_sq)
+                / (F.col("s4") - mean_sq),
+            ).alias("t_stat"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_siegel_tukey — two-sample scale test by alternating extreme
+# ranks
+
+
+@register(
+    "stat_siegel_tukey",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        pooled AS (
+            SELECT segment, d, CAST(x * 100 AS BIGINT) AS v
+            FROM daily
+            WHERE segment IN ('BUILDING', 'MACHINERY')
+        ),
+        pos AS (
+            SELECT segment,
+                   ROW_NUMBER() OVER (ORDER BY v, d, segment) AS i,
+                   COUNT(*) OVER () AS nn
+            FROM pooled
+        ),
+        kept AS (
+            SELECT segment, i, nn,
+                   CASE WHEN i <= nn // 2
+                        THEN 2 * i - (i % 2)
+                        ELSE 2 * (nn + 1 - i) - ((nn - i) % 2)
+                   END AS st
+            FROM pos
+            WHERE NOT (nn % 2 = 1 AND i = (nn + 1) // 2)
+        ),
+        s AS (
+            SELECT CAST(SUM(CASE WHEN segment = 'BUILDING' THEN 1
+                                 ELSE 0 END) AS BIGINT) AS n1,
+                   CAST(SUM(CASE WHEN segment = 'BUILDING' THEN 0
+                                 ELSE 1 END) AS BIGINT) AS n0,
+                   CAST(SUM(CASE WHEN segment = 'BUILDING' THEN st
+                                 ELSE 0 END) AS BIGINT) AS w1
+            FROM kept
+        )
+        SELECT n1 AS n_building, n0 AS n_machinery, w1 AS w_rank_sum,
+               CASE WHEN n1 > 0 AND n0 > 0 THEN
+                 CAST(2 * w1 - n1 * (n1 + n0 + 1) AS DOUBLE)
+                 / sqrt(CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)
+                        * (CAST(n1 AS DOUBLE) + CAST(n0 AS DOUBLE) + 1)
+                        / 3)
+               END AS z_scale
+        FROM s
+    """,
+)
+def stat_siegel_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Siegel-Tukey test for equal dispersion of the BUILDING vs
+    MACHINERY daily revenue series: pool both series, sort ascending,
+    and hand out ranks from the OUTSIDE IN (1 to the smallest, 2-3 to
+    the two largest, 4-5 to the next two smallest, ...) so a group
+    with fatter tails collects systematically smaller ranks — then the
+    rank sum is exactly a Mann-Whitney W and z = (2W - n1(N+1)) /
+    sqrt(n1*n0*(N+1)/3). The alternating assignment is pure integer
+    arithmetic on the ascending row_number i: bottom half st =
+    2i - (i mod 2), top half (j = N+1-i from the top) st =
+    2j - ((j+1) mod 2); an odd pooled count drops the middle value
+    (the classical convention). Classical ST is AMBIGUOUS under ties —
+    this operator PINS the total order (v, d, segment), documented as
+    part of the contract (the same pinned-tiebreak route as
+    window_topk_per_group). The pooled window is unpartitioned but
+    rides the calendar-bounded two-segment daily relation. n1, n0 >= 1
+    at every SF by fixture (both segments ship in region 0 data);
+    the z denominator is guarded anyway, identically on both
+    engines."""
+    daily = seg_daily(spark, sf_dir)
+    pooled = daily.filter(
+        F.col("segment").isin("BUILDING", "MACHINERY")
+    ).select("segment", "d", (F.col("x") * 100).cast("bigint").alias("v"))
+    w_i = Window.orderBy("v", "d", "segment")
+    w_all = Window.partitionBy()
+    pos = pooled.select(
+        "segment",
+        F.row_number().over(w_i).alias("i"),
+        F.count(F.lit(1)).over(w_all).alias("nn"),
+    )
+    j = F.col("nn") + 1 - F.col("i")
+    kept = pos.filter(
+        ~(
+            (F.col("nn") % 2 == 1)
+            & (F.col("i") == (F.col("nn") + 1) / 2)
+        )
+    ).select(
+        "segment",
+        F.when(
+            F.col("i") <= F.expr("CAST(nn DIV 2 AS BIGINT)"),
+            2 * F.col("i") - (F.col("i") % 2),
+        )
+        .otherwise(2 * j - ((F.col("nn") - F.col("i")) % 2))
+        .alias("st"),
+    )
+    s = kept.agg(
+        F.sum(F.when(F.col("segment") == "BUILDING", 1).otherwise(0))
+        .cast("bigint")
+        .alias("n1"),
+        F.sum(F.when(F.col("segment") == "BUILDING", 0).otherwise(1))
+        .cast("bigint")
+        .alias("n0"),
+        F.sum(F.when(F.col("segment") == "BUILDING", F.col("st")).otherwise(0))
+        .cast("bigint")
+        .alias("w1"),
+    )
+    n1_d = F.col("n1").cast("double")
+    n0_d = F.col("n0").cast("double")
+    return s.select(
+        F.col("n1").alias("n_building"),
+        F.col("n0").alias("n_machinery"),
+        F.col("w1").alias("w_rank_sum"),
+        F.when(
+            (F.col("n1") > 0) & (F.col("n0") > 0),
+            (2 * F.col("w1") - F.col("n1") * (F.col("n1") + F.col("n0") + 1))
+            .cast("double")
+            / F.sqrt(n1_d * n0_d * (n1_d + n0_d + 1) / 3),
+        ).alias("z_scale"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_sign_test — paired sign test on the two-segment daily series
+
+
+@register(
+    "stat_sign_test",
+    tags=("stats", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        pairs AS (
+            SELECT b.x AS xb, m.x AS xm
+            FROM (SELECT d, x FROM daily WHERE segment = 'BUILDING') b
+            JOIN (SELECT d, x FROM daily WHERE segment = 'MACHINERY') m
+              ON m.d = b.d
+        ),
+        s AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+                   CAST(SUM(CASE WHEN xb > xm THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_pos,
+                   CAST(SUM(CASE WHEN xb < xm THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_neg
+            FROM pairs
+        )
+        SELECT n_pairs, n_pos, n_neg,
+               CASE WHEN n_pos + n_neg > 0 THEN
+                 CAST(n_pos - n_neg AS DOUBLE)
+                 / sqrt(CAST(n_pos + n_neg AS DOUBLE))
+               END AS z_sign
+        FROM s
+    """,
+)
+def stat_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Paired sign test: on days where BOTH the BUILDING and MACHINERY
+    segments traded, does one systematically out-earn the other?
+    Counts sign(x_b - x_m) over date-matched pairs (exact DECIMAL
+    comparison, ties dropped per the classical definition) and forms
+    the normal approximation z = (n+ - n-) / sqrt(n+ + n-) — the
+    median-difference test that needs no distributional assumption at
+    all. Everything is integer until the one guarded z expression;
+    the date-key join runs on the calendar-bounded daily relation, so
+    corpus-scale work is only the shared daily aggregation."""
+    daily = seg_daily(spark, sf_dir)
+    b = daily.filter(F.col("segment") == "BUILDING").select(
+        "d", F.col("x").alias("xb")
+    )
+    m = daily.filter(F.col("segment") == "MACHINERY").select(
+        "d", F.col("x").alias("xm")
+    )
+    s = b.join(m, "d").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.sum(F.when(F.col("xb") > F.col("xm"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_pos"),
+        F.sum(F.when(F.col("xb") < F.col("xm"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_neg"),
+    )
+    nz = F.col("n_pos") + F.col("n_neg")
+    return s.select(
+        "n_pairs",
+        "n_pos",
+        "n_neg",
+        F.when(
+            nz > 0,
+            (F.col("n_pos") - F.col("n_neg")).cast("double")
+            / F.sqrt(nz.cast("double")),
+        ).alias("z_sign"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_quade_test — range-weighted blocked rank test (Quade 1979)
+
+
+@register(
+    "stat_quade_test",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        cents AS (
+            SELECT segment, date_trunc('month', d) AS mth,
+                   CAST(SUM(CAST(x * 100 AS BIGINT)) AS BIGINT) AS v
+            FROM daily GROUP BY 1, 2
+        ),
+        kk AS (
+            SELECT CAST(COUNT(DISTINCT segment) AS BIGINT) AS k FROM cents
+        ),
+        fullm AS (
+            SELECT mth FROM cents CROSS JOIN kk
+            GROUP BY mth, kk.k HAVING COUNT(*) = MAX(kk.k)
+        ),
+        blocks AS (
+            SELECT c.segment, c.mth, c.v
+            FROM cents c JOIN fullm f ON f.mth = c.mth
+        ),
+        u AS (
+            SELECT segment, mth,
+                   2 * (RANK() OVER (PARTITION BY mth ORDER BY v))
+                     + (COUNT(*) OVER (PARTITION BY mth, v)) - 1 AS u
+            FROM blocks
+        ),
+        rng AS (
+            SELECT mth, CAST(MAX(v) - MIN(v) AS BIGINT) AS dd
+            FROM blocks GROUP BY mth
+        ),
+        q AS (
+            SELECT mth,
+                   2 * (RANK() OVER (ORDER BY dd))
+                     + (COUNT(*) OVER (PARTITION BY dd)) - 1 AS q
+            FROM rng
+        ),
+        m AS (
+            SELECT u.segment,
+                   CAST(q.q * (u.u - kk.k - 1) AS BIGINT) AS m
+            FROM u JOIN q ON q.mth = u.mth CROSS JOIN kk
+        ),
+        sj AS (
+            SELECT segment, CAST(SUM(m) AS BIGINT) AS sj,
+                   CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS DECIMAL(30,0))
+                       AS a2_g
+            FROM m GROUP BY segment
+        ),
+        nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM rng),
+        tot AS (
+            SELECT CAST(SUM(CAST(sj AS DECIMAL(14,0)) * sj) AS DECIMAL(30,0))
+                       AS bnum,
+                   CAST(SUM(a2_g) AS DECIMAL(30,0)) AS a2
+            FROM sj
+        )
+        SELECT nb.n AS n_blocks, kk.k, (kk.k - 1) AS df1,
+               (nb.n - 1) * (kk.k - 1) AS df2,
+               CASE WHEN CAST(nb.n AS DECIMAL(5,0)) * tot.a2 - tot.bnum <> 0
+               THEN
+                 (CAST(nb.n - 1 AS DOUBLE)
+                  * CAST(CAST(tot.bnum AS VARCHAR) AS DOUBLE))
+                 / CAST(CAST(CAST(nb.n AS DECIMAL(5,0)) * tot.a2 - tot.bnum
+                        AS VARCHAR) AS DOUBLE)
+               END AS t3_stat
+        FROM tot CROSS JOIN nb CROSS JOIN kk
+    """,
+)
+def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quade test (Quade 1979) for treatment differences across the
+    five market segments with MONTHS as blocks: the range-weighted
+    Friedman — blocks whose five monthly revenues spread widest carry
+    the most information, so each month's within-block ranks are
+    weighted by the rank of the month's range. Only COMPLETE months
+    (all k segments present — the guard stat_friedman_test's advice
+    note asked for, here structural) enter. Exactness: within-month
+    and range ranks both use the doubled-midrank integer identity
+    (u = 2*rank + ties - 1), so the scaled score m_ij = q_i*(u_ij-k-1)
+    = 4*S_ij is a pure BIGINT; A2 = sum m^2 and B_num = sum_j S_j^2
+    accumulate in DECIMAL(30,0); T3 = (n-1)*B_num / (n*A2 - B_num) is
+    invariant to the 4x scaling and assembles at one guarded double
+    edge (all-scores-equal degenerates NULL identically). The
+    unpartitioned range-rank window rides the <= 84-month bounded
+    relation; corpus-scale work is only the shared daily agg."""
+    daily = seg_daily(spark, sf_dir)
+    cents = daily.groupBy(
+        "segment", F.trunc("d", "month").alias("mth")
+    ).agg(
+        F.sum((F.col("x") * 100).cast("bigint")).cast("bigint").alias("v")
+    )
+    kk = cents.agg(
+        F.countDistinct("segment").cast("bigint").alias("k")
+    )
+    fullm = (
+        cents.crossJoin(F.broadcast(kk))
+        .groupBy("mth", "k")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") == F.col("k"))
+        .select("mth")
+    )
+    blocks = cents.join(F.broadcast(fullm), "mth").persist()
+    wb = Window.partitionBy("mth")
+    u = blocks.select(
+        "segment",
+        "mth",
+        (
+            2 * F.rank().over(wb.orderBy("v"))
+            + F.count(F.lit(1)).over(Window.partitionBy("mth", "v"))
+            - 1
+        ).alias("u"),
+    )
+    rng = blocks.groupBy("mth").agg(
+        (F.max("v") - F.min("v")).cast("bigint").alias("dd")
+    )
+    q = rng.select(
+        "mth",
+        (
+            2 * F.rank().over(Window.orderBy("dd"))
+            + F.count(F.lit(1)).over(Window.partitionBy("dd"))
+            - 1
+        ).alias("q"),
+    )
+    m = (
+        u.join(F.broadcast(q), "mth")
+        .crossJoin(F.broadcast(kk))
+        .select(
+            "segment",
+            (F.col("q") * (F.col("u") - F.col("k") - 1))
+            .cast("bigint")
+            .alias("m"),
+        )
+    )
+    sj = m.groupBy("segment").agg(
+        F.sum("m").cast("bigint").alias("sj"),
+        F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))
+        .cast("decimal(30,0)")
+        .alias("a2_g"),
+    )
+    nb = rng.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    tot = sj.agg(
+        F.sum(F.col("sj").cast("decimal(14,0)") * F.col("sj"))
+        .cast("decimal(30,0)")
+        .alias("bnum"),
+        F.sum("a2_g").cast("decimal(30,0)").alias("a2"),
+    )
+    den = F.col("n").cast("decimal(5,0)") * F.col("a2") - F.col("bnum")
+    return (
+        tot.crossJoin(F.broadcast(nb))
+        .crossJoin(F.broadcast(kk))
+        .select(
+            F.col("n").alias("n_blocks"),
+            "k",
+            (F.col("k") - 1).alias("df1"),
+            ((F.col("n") - 1) * (F.col("k") - 1)).alias("df2"),
+            F.when(
+                den != 0,
+                (F.col("n") - 1).cast("double") * as_d(F.col("bnum"))
+                / as_d(den),
+            ).alias("t3_stat"),
+        )
+    )
+
+
+@register(
+    "stat_bartlett_test",
+    tags=("stats", "agg"),
+    oracle=f"""
+        WITH base AS (
+            SELECT o_orderpriority AS g,
+                   CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS v
+            FROM orders
+        ),
+        per AS (
+            SELECT g, CAST(COUNT(*) AS BIGINT) AS nj,
+                   CAST(SUM(v) AS DECIMAL(19,0)) AS s1,
+                   CAST(SUM(CAST(v AS DECIMAL(15,0)) * v) AS DECIMAL(30,0))
+                       AS s2
+            FROM base GROUP BY g
+        ),
+        dev AS (
+            SELECT g, nj,
+                   CAST(nj AS DECIMAL(8,0)) * s2 - s1 * s1 AS ssd_num
+            FROM per
+        ),
+        lng AS (
+            SELECT g, nj,
+                   CAST(CAST(ssd_num AS VARCHAR) AS DOUBLE)
+                     / CAST(nj AS DOUBLE) AS ssd,
+                   CASE WHEN ssd_num > 0 THEN
+                     CAST(ln(CAST(CAST(ssd_num AS VARCHAR) AS DOUBLE)
+                             / CAST(nj AS DOUBLE)
+                             / (CAST(nj AS DOUBLE) - 1))
+                          AS DECIMAL(12,6))
+                   END AS lnq
+            FROM dev
+        ),
+        red AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS k,
+                   CAST(SUM(nj) AS BIGINT) AS n,
+                   CAST(SUM(CASE WHEN lnq IS NOT NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS k_ok,
+                   CAST(CAST(SUM((nj - 1) * lnq) AS VARCHAR) AS DOUBLE)
+                       AS wsum,
+                   {o_ordered_fold_sum('g', 'ssd')}
+                       AS ssd_pool,
+                   {o_ordered_fold_sum(
+                       'g',
+                       'CAST(1 AS DOUBLE) / (CAST(nj AS DOUBLE) - 1)',
+                   )} AS rsum
+            FROM lng
+        )
+        SELECT k, n,
+               CASE WHEN k_ok = k AND n > k THEN
+                 (CAST(n - k AS DOUBLE)
+                  * CAST(CAST(CAST(ln(ssd_pool / CAST(n - k AS DOUBLE))
+                                   AS DECIMAL(12,6)) AS VARCHAR) AS DOUBLE)
+                  - wsum)
+                 / (CAST(1 AS DOUBLE)
+                    + (rsum - CAST(1 AS DOUBLE) / CAST(n - k AS DOUBLE))
+                      / (CAST(3 AS DOUBLE) * (CAST(k AS DOUBLE) - 1)))
+               END AS bartlett_chi2,
+               (k - 1) AS df
+        FROM red
+    """,
+)
+def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bartlett's test for equal variances across the five order-
+    priority cohorts on order value — the PARAMETRIC member of the
+    variance-homogeneity family (stat_levene_brown_forsythe is the
+    robust one, stat_hartley_fmax the quick screen; all three now run
+    on comparable bases). chi2 = [(N-k) ln Sp^2 - sum (n_j-1) ln
+    S_j^2] / C with C the Bartlett small-sample correction. Exactness:
+    each group's SSD numerator n_j*S2 - S1^2 is exact DECIMAL(38,0)
+    from integer-cents sums, so ln(S_j^2) is ONE deterministic double
+    expression quantized to DECIMAL(12,6) (the quantized-log recipe) —
+    the weighted sum sum((n_j-1) ln_q) is then an exact decimal dot
+    product. The two genuine float reductions over the k=5 groups
+    (pooled SSD, reciprocal sum for C) fold in PINNED group order on
+    both engines. Any zero-variance group NULLs chi2 identically (the
+    k_ok = k gate compares exact decimals). One hash agg over the
+    corpus; everything after is k-sized."""
+    o = load_table(spark, sf_dir, "orders")
+    base = o.select(
+        F.col("o_orderpriority").alias("g"),
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("v"),
+    )
+    per = base.groupBy("g").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nj"),
+        F.sum("v").cast("decimal(19,0)").alias("s1"),
+        F.sum(F.col("v").cast("decimal(15,0)") * F.col("v"))
+        .cast("decimal(30,0)")
+        .alias("s2"),
+    )
+    ssd_num = F.col("nj").cast("decimal(8,0)") * F.col("s2") - F.col(
+        "s1"
+    ) * F.col("s1")
+    nj_d = F.col("nj").cast("double")
+    ssd = as_d(ssd_num) / nj_d
+    lng = per.select(
+        "g",
+        "nj",
+        ssd.alias("ssd"),
+        F.when(
+            ssd_num > 0,
+            F.log(ssd / (nj_d - 1)).cast("decimal(12,6)"),
+        ).alias("lnq"),
+    )
+    red = lng.agg(
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.sum("nj").cast("bigint").alias("n"),
+        F.sum(F.when(F.col("lnq").isNotNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("k_ok"),
+        as_d(F.sum((F.col("nj") - 1) * F.col("lnq"))).alias("wsum"),
+        ordered_fold_sum(F.col("g"), F.col("ssd")).alias("ssd_pool"),
+        ordered_fold_sum(
+            F.col("g"), F.lit(1.0) / (F.col("nj").cast("double") - 1)
+        ).alias("rsum"),
+    )
+    nk_d = (F.col("n") - F.col("k")).cast("double")
+    k_d = F.col("k").cast("double")
+    lnp_q = as_d(
+        F.log(F.col("ssd_pool") / nk_d).cast("decimal(12,6)")
+    )
+    return red.select(
+        "k",
+        "n",
+        F.when(
+            (F.col("k_ok") == F.col("k")) & (F.col("n") > F.col("k")),
+            (nk_d * lnp_q - F.col("wsum"))
+            / (
+                F.lit(1.0)
+                + (F.col("rsum") - F.lit(1.0) / nk_d)
+                / (F.lit(3.0) * (k_d - 1))
+            ),
+        ).alias("bartlett_chi2"),
+        (F.col("k") - 1).alias("df"),
+    )
+
+
+@register(
+    "stat_cuzick_trend",
+    tags=("stats", "window", "agg"),
+    oracle="""
+        WITH base AS (
+            SELECT CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT) AS l,
+                   CAST(o_totalprice AS DECIMAL(12,2)) AS x
+            FROM orders
+        ),
+        rv AS (
+            SELECT v, t,
+                   2 * (SUM(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - t)
+                       + t + 1 AS mr2
+            FROM (SELECT x AS v, COUNT(*) AS t FROM base GROUP BY x)
+        ),
+        joined AS (
+            SELECT base.l, rv.mr2
+            FROM base JOIN rv ON rv.v = base.x
+        ),
+        s AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(l) AS BIGINT) AS sl,
+                   CAST(SUM(l * l) AS BIGINT) AS sll,
+                   CAST(SUM(CAST(mr2 AS DECIMAL(38,0))) AS DECIMAL(38,0))
+                       AS su,
+                   CAST(SUM(CAST(mr2 AS DECIMAL(19,0)) * mr2)
+                        AS DECIMAL(38,0)) AS suu,
+                   CAST(SUM(l * CAST(mr2 AS DECIMAL(38,0)))
+                        AS DECIMAL(38,0)) AS t2
+            FROM joined
+        )
+        SELECT n,
+               CAST(CAST(t2 AS VARCHAR) AS DOUBLE) / 2 AS t_stat,
+               CASE WHEN n > 1
+                     AND CAST(n AS DOUBLE) * CAST(sll AS DOUBLE)
+                         - CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) > 0
+                     AND CAST(n AS DOUBLE) * CAST(CAST(suu AS VARCHAR)
+                                                  AS DOUBLE)
+                         - CAST(CAST(su AS VARCHAR) AS DOUBLE)
+                           * CAST(CAST(su AS VARCHAR) AS DOUBLE) > 0 THEN
+                 (CAST(CAST(t2 AS VARCHAR) AS DOUBLE)
+                  - CAST(sl AS DOUBLE)
+                    * CAST(CAST(su AS VARCHAR) AS DOUBLE)
+                    / CAST(n AS DOUBLE))
+                 / sqrt(
+                     (CAST(sll AS DOUBLE)
+                      - CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE)
+                        / CAST(n AS DOUBLE))
+                     * (CAST(CAST(suu AS VARCHAR) AS DOUBLE)
+                        - CAST(CAST(su AS VARCHAR) AS DOUBLE)
+                          * CAST(CAST(su AS VARCHAR) AS DOUBLE)
+                          / CAST(n AS DOUBLE))
+                     / (CAST(n AS DOUBLE) - 1))
+               END AS z_trend
+        FROM s
+    """,
+)
+def stat_cuzick_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cuzick's test (Cuzick 1985) for a monotone TREND in order value
+    across the five ordinal priority cohorts (scores l = the
+    priority's leading digit, 1-URGENT .. 5-LOW): T = sum l_j R_j over
+    pooled midranks — the Wilcoxon-type trend test that reads
+    direction where Jonckheere-Terpstra reads ordered dominance and
+    Kruskal-Wallis reads any difference. Moments are the EXACT
+    finite-population permutation moments of the realized (score,
+    midrank) multisets (the stat_ansari_bradley recipe — correct under
+    ties with no continuity fudge): E(T) = Sl*Su/N, Var(T) =
+    (Sll - Sl^2/N)(Suu - Su^2/N)/(N-1). Pooled doubled midranks come
+    from the bucket+carry machinery (midranks2 — rank work scales
+    with distinct values per bucket, never a corpus sort); all six
+    sufficient sums are exact integer/DECIMAL(38,0) (the doubled-rank
+    2x cancels between T-E(T) and sqrt(Var)); z assembles in ONE
+    guarded double expression (degenerate score or rank variance NULLs
+    it identically)."""
+    o = load_table(spark, sf_dir, "orders")
+    base = o.select(
+        F.substring("o_orderpriority", 1, 1).cast("bigint").alias("l"),
+        F.col("o_totalprice").cast("decimal(12,2)").alias("x"),
+    )
+    rv = midranks2(base, "x", 10000)
+    joined = base.join(rv, base.x == rv.v).select("l", "mr2")
+    s = joined.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("l").cast("bigint").alias("sl"),
+        F.sum(F.col("l") * F.col("l")).cast("bigint").alias("sll"),
+        F.sum(F.col("mr2").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("su"),
+        F.sum(F.col("mr2").cast("decimal(19,0)") * F.col("mr2"))
+        .cast("decimal(38,0)")
+        .alias("suu"),
+        F.sum(F.col("l") * F.col("mr2").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("t2"),
+    )
+    n_d = F.col("n").cast("double")
+    sl_d = F.col("sl").cast("double")
+    sll_d = F.col("sll").cast("double")
+    su_d = as_d(F.col("su"))
+    suu_d = as_d(F.col("suu"))
+    t2_d = as_d(F.col("t2"))
+    var_l = n_d * sll_d - sl_d * sl_d
+    var_u = n_d * suu_d - su_d * su_d
+    return s.select(
+        "n",
+        (t2_d / 2).alias("t_stat"),
+        F.when(
+            (F.col("n") > 1) & (var_l > 0) & (var_u > 0),
+            (t2_d - sl_d * su_d / n_d)
+            / F.sqrt(
+                (sll_d - sl_d * sl_d / n_d)
+                * (suu_d - su_d * su_d / n_d)
+                / (n_d - 1)
+            ),
+        ).alias("z_trend"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_jarque_bera — moment-based normality screen
+
+
+@register(
+    "stat_jarque_bera",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH base AS (
+            SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS v
+            FROM orders
+        ),
+        split AS (
+            SELECT v, v // 10000 AS a, v % 10000 AS b FROM base
+        ),
+        s AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS s1,
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(15,0)) * v) AS VARCHAR)
+                        AS DOUBLE) AS s2,
+                   CAST(CAST(SUM(CAST(CAST(v AS DECIMAL(15,0)) * v
+                                      AS DECIMAL(23,0)) * v) AS VARCHAR)
+                        AS DOUBLE) AS s3,
+                   CAST(1e16 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST(a*a*a*a AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(4e12 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST(a*a*a*b AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(6e8 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST((a*b)*(a*b) AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(4e4 AS DOUBLE)
+                     * CAST(CAST(SUM(CAST(a*b*b*b AS DECIMAL(28,0)))
+                                 AS VARCHAR) AS DOUBLE)
+                   + CAST(CAST(SUM(CAST((b*b)*(b*b) AS DECIMAL(28,0)))
+                               AS VARCHAR) AS DOUBLE) AS s4
+            FROM split
+        ),
+        m AS (
+            SELECT n,
+                   s1 / n AS mu,
+                   s2 / n - (s1 / n) * (s1 / n) AS m2,
+                   s3 / n - 3 * (s1 / n) * (s2 / n)
+                     + 2 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
+                   s4 / n - 4 * (s1 / n) * (s3 / n)
+                     + 6 * (s1 / n) * (s1 / n) * (s2 / n)
+                     - 3 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n) AS m4
+            FROM s
+        )
+        SELECT n,
+               CASE WHEN m2 > 0 THEN
+                 m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2)) END AS skewness,
+               CASE WHEN m2 > 0 THEN m4 / (m2 * m2) END AS kurtosis,
+               CASE WHEN m2 > 0 THEN
+                 CAST(n AS DOUBLE)
+                 * ((m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2)))
+                    * (m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2))) / 6
+                    + (m4 / (m2 * m2) - 3) * (m4 / (m2 * m2) - 3) / 24)
+               END AS jb_stat
+        FROM m
+    """,
+)
+def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jarque-Bera normality test on order value: JB = n(S^2/6 +
+    (K-3)^2/24) from sample skewness and kurtosis — the moment-based
+    screen every returns-distribution report starts with
+    (agg_skew_kurtosis_exact emits the moments; this operator emits
+    the TEST). Exactness: s1-s3 accumulate in stepped-width DECIMALs
+    (ceilings sf~4e8+). s4 is the overflow risk — a single SUM(v^4)
+    in DECIMAL(38,0) reaches ~8e37 at sf1000 (round-11 advisor
+    finding: Spark silently NULLs past the 38-digit cap while DuckDB
+    raises — a divergent failure mode). Fix: split v = 1e4*a + b
+    (BIGINT div/mod, identical both engines) and accumulate the FIVE
+    binomial-expansion sums S(a^4), S(a^3 b), S((ab)^2), S(a b^3),
+    S(b^4) separately — every per-row term is <= 1e16 (BIGINT-exact),
+    every accumulator is <= 1.5e25 at sf1000 in DECIMAL(38,0) (ceiling
+    ~sf1e12), and s4 = 1e16*S1 + 4e12*S2 + 6e8*S3 + 4e4*S4 + S5 is
+    recombined as ONE identically-parenthesized double expression
+    after each sum crosses the double edge once via the VARCHAR
+    route — no quantization anywhere. Note: the five sums each round
+    independently at their VARCHAR->double crossing BEFORE the
+    weighted recombination, so s4 is deterministic and cross-engine
+    identical but may sit a few ulps off the true Sv^4 (it is NOT
+    bit-exact to the mathematical sum — don't rely on that). All
+    moments/statistics remain ONE
+    identically-parenthesized double expression on both engines —
+    m2^1.5 is written sqrt(m2)^3 by repeated multiplication (libm pow
+    is NOT cross-engine-stable; sqrt and * are IEEE-exact). Degenerate
+    zero variance NULLs all three outputs identically. One scan, one
+    5-number agg; nothing downstream of the agg touches the corpus."""
+    o = load_table(spark, sf_dir, "orders")
+    base = o.select(
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("v")
+    )
+    base = base.select(
+        "v",
+        F.expr("v div 10000").alias("a"),
+        (F.col("v") % 10000).alias("b"),
+    )
+    v15 = F.col("v").cast("decimal(15,0)")
+    a, b = F.col("a"), F.col("b")
+    d28 = "decimal(28,0)"
+    s = base.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        as_d(F.sum(F.col("v").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(v15 * F.col("v"))).alias("s2"),
+        as_d(
+            F.sum((v15 * F.col("v")).cast("decimal(23,0)") * F.col("v"))
+        ).alias("s3"),
+        as_d(F.sum((a * a * a * a).cast(d28))).alias("sa4"),
+        as_d(F.sum((a * a * a * b).cast(d28))).alias("sa3b"),
+        as_d(F.sum(((a * b) * (a * b)).cast(d28))).alias("sa2b2"),
+        as_d(F.sum((a * b * b * b).cast(d28))).alias("sab3"),
+        as_d(F.sum(((b * b) * (b * b)).cast(d28))).alias("sb4"),
+    )
+    s = s.select(
+        "n",
+        "s1",
+        "s2",
+        "s3",
+        (
+            F.expr("CAST(1e16 AS DOUBLE)") * F.col("sa4")
+            + F.expr("CAST(4e12 AS DOUBLE)") * F.col("sa3b")
+            + F.expr("CAST(6e8 AS DOUBLE)") * F.col("sa2b2")
+            + F.expr("CAST(4e4 AS DOUBLE)") * F.col("sab3")
+            + F.col("sb4")
+        ).alias("s4"),
+    )
+    n_d = F.col("n").cast("double")
+    mu = F.col("s1") / n_d
+    m2 = F.col("s2") / n_d - mu * mu
+    m3 = (
+        F.col("s3") / n_d
+        - 3 * mu * (F.col("s2") / n_d)
+        + 2 * mu * mu * mu
+    )
+    m4 = (
+        F.col("s4") / n_d
+        - 4 * mu * (F.col("s3") / n_d)
+        + 6 * mu * mu * (F.col("s2") / n_d)
+        - 3 * mu * mu * mu * mu
+    )
+    sk = m3 / (F.sqrt(m2) * F.sqrt(m2) * F.sqrt(m2))
+    ku = m4 / (m2 * m2)
+    return s.select(
+        "n",
+        F.when(m2 > 0, sk).alias("skewness"),
+        F.when(m2 > 0, ku).alias("kurtosis"),
+        F.when(
+            m2 > 0,
+            n_d * (sk * sk / 6 + (ku - 3) * (ku - 3) / 24),
+        ).alias("jb_stat"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_kendall_w — concordance of the 5 segments' month rankings
+
+
+_MONTH_GRID_SQL = """
+        months AS (
+            SELECT DISTINCT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS m
+            FROM orders
+        ),
+        segs AS (SELECT DISTINCT c_mktsegment AS segment FROM customer),
+        msum AS (
+            SELECT c.c_mktsegment AS segment,
+                   strftime(CAST(o.o_orderdate AS DATE), '%Y-%m') AS m,
+                   CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
+                        AS DECIMAL(18,2)) AS x
+            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+            GROUP BY 1, 2
+        ),
+        grid AS (
+            SELECT months.m, segs.segment,
+                   COALESCE(msum.x, CAST(0 AS DECIMAL(18,2))) AS x0
+            FROM months CROSS JOIN segs
+            LEFT JOIN msum ON msum.m = months.m
+                          AND msum.segment = segs.segment
+        )
+"""
+
+
+def _month_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(m, segment, x0): month x segment revenue grid with absent
+    cells as exact 0 — every judge ranks every object."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    months = o.select(
+        F.date_format("o_orderdate", "yyyy-MM").alias("m")
+    ).distinct()
+    segs = c.select(F.col("c_mktsegment").alias("segment")).distinct()
+    msum = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_mktsegment").alias("segment"),
+            F.date_format("o_orderdate", "yyyy-MM").alias("m"),
+        )
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+             .cast("decimal(18,2)").alias("x"))
+    )
+    return (
+        months.crossJoin(F.broadcast(segs))
+        .join(F.broadcast(msum), ["m", "segment"], "left")
+        .select(
+            "m",
+            "segment",
+            F.coalesce(F.col("x"), F.lit(0).cast("decimal(18,2)")).alias("x0"),
+        )
+    )
+
+
+@register(
+    "stat_kendall_w",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH {_MONTH_GRID_SQL},
+        ranked AS (
+            SELECT m, segment, x0,
+                   RANK() OVER (PARTITION BY segment ORDER BY x0) AS rk,
+                   COUNT(*) OVER (PARTITION BY segment, x0) AS teq
+            FROM grid
+        ),
+        rsum AS (
+            SELECT m, CAST(SUM(2 * rk + teq - 1) AS BIGINT) AS r2
+            FROM ranked GROUP BY m
+        ),
+        dims AS (
+            SELECT CAST(COUNT(DISTINCT m) AS BIGINT) AS n,
+                   CAST(COUNT(DISTINCT segment) AS BIGINT) AS mj
+            FROM grid
+        ),
+        ties AS (
+            SELECT CAST(SUM(t * t * t - t) AS BIGINT) AS tsum
+            FROM (SELECT segment, x0, CAST(COUNT(*) AS BIGINT) AS t
+                  FROM grid GROUP BY segment, x0)
+        ),
+        s4 AS (
+            SELECT CAST(SUM((r2 - mj * (n + 1)) * (r2 - mj * (n + 1)))
+                        AS BIGINT) AS s4
+            FROM rsum CROSS JOIN dims
+        )
+        SELECT dims.n AS n_months, dims.mj AS m_judges, s4.s4 AS s_numer,
+               ties.tsum AS tie_term,
+               CASE WHEN dims.mj * dims.mj * (dims.n * dims.n * dims.n - dims.n)
+                         - dims.mj * ties.tsum > 0 THEN
+                 CAST(3 * s4.s4 AS DOUBLE)
+                   / CAST(dims.mj * dims.mj
+                            * (dims.n * dims.n * dims.n - dims.n)
+                          - dims.mj * ties.tsum AS DOUBLE)
+               END AS w
+        FROM dims CROSS JOIN ties CROSS JOIN s4
+    """,
+)
+def stat_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kendall's coefficient of concordance W across the five market
+    segments' rankings of calendar months by revenue: do the segments
+    agree on which months are strong? W = 12S / (m^2(n^3-n) - m*sum T)
+    with the standard tie correction (Kendall & Babington Smith 1939).
+    Judges rank the FULL month grid (absent cells enter as exact
+    decimal 0 — the fin_active_share grid lesson), so every judge
+    ranks every object and midranks handle the zero ties. Exactness:
+    doubled midranks 2r_ij = 2*rank + t_eq - 1 are integers, per-month
+    rank sums R2_j and the centered square sum S4 = sum (R2_j -
+    m(n+1))^2 = 4S stay in BIGINT (n~85 months, m=5 — S4 < 1e9), the
+    tie term sum(t^3-t) is integer, and W = 3*S4 / (m^2(n^3-n) - m*T)
+    is ONE double division at the edge. Degenerate all-tied grids zero
+    the denominator -> NULL identically on both engines. Scale: corpus
+    work is the month x segment aggregation; ranking runs on the
+    |months| x |segments| grid relation."""
+    grid = _month_grid(spark, sf_dir)
+    wrk = Window.partitionBy("segment").orderBy("x0")
+    ranked = grid.select(
+        "m",
+        "segment",
+        "x0",
+        F.rank().over(wrk).alias("rk"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("segment", "x0"))
+        .alias("teq"),
+    )
+    rsum = ranked.groupBy("m").agg(
+        F.sum(2 * F.col("rk") + F.col("teq") - 1).cast("bigint").alias("r2")
+    )
+    dims = grid.agg(
+        F.countDistinct("m").cast("bigint").alias("n"),
+        F.countDistinct("segment").cast("bigint").alias("mj"),
+    )
+    ties = (
+        grid.groupBy("segment", "x0")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
+        .agg(
+            F.sum(
+                F.col("t") * F.col("t") * F.col("t") - F.col("t")
+            ).cast("bigint").alias("tsum")
+        )
+    )
+    s4 = (
+        rsum.crossJoin(F.broadcast(dims))
+        .select(
+            (
+                (F.col("r2") - F.col("mj") * (F.col("n") + 1))
+                * (F.col("r2") - F.col("mj") * (F.col("n") + 1))
+            ).alias("sq")
+        )
+        .agg(F.sum("sq").cast("bigint").alias("s4"))
+    )
+    den = (
+        F.col("mj") * F.col("mj")
+        * (F.col("n") * F.col("n") * F.col("n") - F.col("n"))
+        - F.col("mj") * F.col("tsum")
+    )
+    return (
+        dims.crossJoin(F.broadcast(ties))
+        .crossJoin(F.broadcast(s4))
+        .select(
+            F.col("n").alias("n_months"),
+            F.col("mj").alias("m_judges"),
+            F.col("s4").alias("s_numer"),
+            F.col("tsum").alias("tie_term"),
+            F.when(
+                den > 0,
+                (3 * F.col("s4")).cast("double") / den.cast("double"),
+            ).alias("w"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_gk_gamma — ordinal association priority x price quintile
+
+
+@register(
+    "stat_gk_gamma",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH rng AS (
+            SELECT MIN(o_totalprice) AS pmin, MAX(o_totalprice) AS pmax
+            FROM orders
+        ),
+        coded AS (
+            SELECT CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS r,
+                   CASE WHEN pmax = pmin THEN 0
+                        ELSE LEAST(4, CAST(FLOOR(
+                       (CAST(o_totalprice AS DOUBLE)
+                        - CAST(pmin AS DOUBLE))
+                       / ((CAST(pmax AS DOUBLE) - CAST(pmin AS DOUBLE))
+                          / CAST(5 AS DOUBLE))) AS INT)) END AS b
+            FROM orders CROSS JOIN rng
+        ),
+        cells AS (
+            SELECT r, b, CAST(COUNT(*) AS BIGINT) AS n
+            FROM coded GROUP BY r, b
+        ),
+        pairs AS (
+            SELECT CAST(SUM(CASE WHEN c2.r > c1.r AND c2.b > c1.b
+                                 THEN c1.n * c2.n ELSE 0 END) AS BIGINT)
+                       AS c_pairs,
+                   CAST(SUM(CASE WHEN c2.r > c1.r AND c2.b < c1.b
+                                 THEN c1.n * c2.n ELSE 0 END) AS BIGINT)
+                       AS d_pairs
+            FROM cells c1 CROSS JOIN cells c2
+        )
+        SELECT c_pairs, d_pairs,
+               CASE WHEN c_pairs + d_pairs > 0 THEN
+                 CAST(c_pairs - d_pairs AS DOUBLE)
+                   / CAST(c_pairs + d_pairs AS DOUBLE)
+               END AS gamma
+        FROM pairs
+    """,
+)
+def stat_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Goodman-Kruskal gamma between order priority (ordinal 1..5) and
+    order-value quintile bin: gamma = (C - D)/(C + D) over concordant/
+    discordant pairs — the tie-ignoring ordinal association measure
+    (Goodman & Kruskal 1954). The pair enumeration runs on the 5x5
+    CELL grid (each ordered cell pair contributes n1*n2), never on row
+    pairs — the stat_kendall_tau cell-pair precedent. Bins come from
+    the exact decimal min/max with the same double bin arithmetic as
+    ml_bagging_oob's histogram (deterministic IEEE ops, identical
+    expressions). C and D are exact BIGINTs (cell products ~n^2/4:
+    ceiling ~sf2000 before C nears 2^63 — documented); gamma is ONE
+    double division. Degenerate all-tied tables (C+D=0) NULL
+    identically. Corpus work: one scan + one 25-cell agg."""
+    o = load_table(spark, sf_dir, "orders")
+    rng = o.agg(
+        F.min("o_totalprice").alias("pmin"), F.max("o_totalprice").alias("pmax")
+    )
+    coded = o.crossJoin(F.broadcast(rng)).select(
+        F.substring("o_orderpriority", 1, 1).cast("int").alias("r"),
+        F.when(F.col("pmax") == F.col("pmin"), F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(4),
+                F.floor(
+                    (F.col("o_totalprice").cast("double")
+                     - F.col("pmin").cast("double"))
+                    / ((F.col("pmax").cast("double")
+                        - F.col("pmin").cast("double")) / F.lit(5.0))
+                ).cast("int"),
+            )
+        ).alias("b"),
+    )
+    cells = coded.groupBy("r", "b").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    c1 = cells.select(
+        F.col("r").alias("r1"), F.col("b").alias("b1"), F.col("n").alias("n1")
+    )
+    c2 = cells.select(
+        F.col("r").alias("r2"), F.col("b").alias("b2"), F.col("n").alias("n2")
+    )
+    pairs = c1.crossJoin(F.broadcast(c2)).agg(
+        F.sum(
+            F.when(
+                (F.col("r2") > F.col("r1")) & (F.col("b2") > F.col("b1")),
+                F.col("n1") * F.col("n2"),
+            ).otherwise(0)
+        ).cast("bigint").alias("c_pairs"),
+        F.sum(
+            F.when(
+                (F.col("r2") > F.col("r1")) & (F.col("b2") < F.col("b1")),
+                F.col("n1") * F.col("n2"),
+            ).otherwise(0)
+        ).cast("bigint").alias("d_pairs"),
+    )
+    tot = F.col("c_pairs") + F.col("d_pairs")
+    return pairs.select(
+        "c_pairs",
+        "d_pairs",
+        F.when(
+            tot > 0,
+            (F.col("c_pairs") - F.col("d_pairs")).cast("double")
+            / tot.cast("double"),
+        ).alias("gamma"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_mantel_haenszel — stratified 2x2 common odds ratio + CMH test
+
+
+@register(
+    "stat_mantel_haenszel",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH coded AS (
+            SELECT EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS y,
+                   CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                        THEN 1 ELSE 0 END AS expo,
+                   CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS outc
+            FROM orders
+        ),
+        strata AS (
+            SELECT y,
+                   CAST(SUM(expo * outc) AS BIGINT) AS a,
+                   CAST(SUM(expo * (1 - outc)) AS BIGINT) AS b,
+                   CAST(SUM((1 - expo) * outc) AS BIGINT) AS c,
+                   CAST(SUM((1 - expo) * (1 - outc)) AS BIGINT) AS d,
+                   CAST(COUNT(*) AS BIGINT) AS n
+            FROM coded GROUP BY y
+        ),
+        folded AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
+                   CAST(SUM(a) AS BIGINT) AS sum_a,
+                   list_reduce(list(CAST(a * d AS DOUBLE) / CAST(n AS DOUBLE)
+                                    ORDER BY y), (acc, x) -> acc + x) AS s_ad,
+                   list_reduce(list(CAST(b * c AS DOUBLE) / CAST(n AS DOUBLE)
+                                    ORDER BY y), (acc, x) -> acc + x) AS s_bc,
+                   list_reduce(list(CAST((a + b) * (a + c) AS DOUBLE)
+                                      / CAST(n AS DOUBLE)
+                                    ORDER BY y), (acc, x) -> acc + x) AS s_e,
+                   list_reduce(list(
+                       (CAST((a + b) * (c + d) AS DOUBLE)
+                        * CAST((a + c) * (b + d) AS DOUBLE))
+                       / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
+                          * (CAST(n AS DOUBLE) - CAST(1 AS DOUBLE)))
+                       ORDER BY y), (acc, x) -> acc + x) AS s_v
+            FROM strata WHERE n > 1
+        )
+        SELECT n_strata, sum_a,
+               CASE WHEN s_bc > 0 THEN s_ad / s_bc END AS or_mh,
+               CASE WHEN s_v > 0 THEN
+                 (CAST(sum_a AS DOUBLE) - s_e)
+                   * (CAST(sum_a AS DOUBLE) - s_e) / s_v
+               END AS cmh_chi2
+        FROM folded
+    """,
+)
+def stat_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mantel-Haenszel common odds ratio and Cochran-Mantel-Haenszel
+    chi-square across year strata for the 2x2 of (high order priority)
+    x (order fulfilled): does the priority-fulfilment association hold
+    pooling over years? OR_MH = sum(a_i d_i/n_i)/sum(b_i c_i/n_i);
+    CMH = (sum a - sum E)^2 / sum V with E = (a+b)(a+c)/n and
+    V = (a+b)(c+d)(a+c)(b+d) / (n^2(n-1)), no continuity correction
+    (documented convention, matched by the reference test). Exactness:
+    per-stratum cells are conditional-sum integers; each stratum's
+    four double terms are single fixed-parenthesization expressions
+    (products stay in BIGINT before ONE cast each); the four
+    across-strata sums are ORDER-PINNED folds by year (sorted
+    collect_list fold here, ordered list_reduce there) — never a
+    partition-ordered float sum. Zero denominators (no discordant
+    pairs / single-row strata) NULL identically; strata with n<=1 are
+    excluded on both engines. Corpus work: one scan, one |years|-row
+    agg."""
+    o = load_table(spark, sf_dir, "orders")
+    coded = o.select(
+        F.year("o_orderdate").cast("bigint").alias("y"),
+        F.when(
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
+        ).otherwise(0).alias("expo"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("outc"),
+    )
+    strata = (
+        coded.groupBy("y")
+        .agg(
+            F.sum(F.col("expo") * F.col("outc")).cast("bigint").alias("a"),
+            F.sum(F.col("expo") * (1 - F.col("outc"))).cast("bigint").alias("b"),
+            F.sum((1 - F.col("expo")) * F.col("outc")).cast("bigint").alias("c"),
+            F.sum((1 - F.col("expo")) * (1 - F.col("outc")))
+            .cast("bigint")
+            .alias("d"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+        )
+        .filter(F.col("n") > 1)
+    )
+    n_d = F.col("n").cast("double")
+    t_ad = (F.col("a") * F.col("d")).cast("double") / n_d
+    t_bc = (F.col("b") * F.col("c")).cast("double") / n_d
+    t_e = ((F.col("a") + F.col("b")) * (F.col("a") + F.col("c"))).cast(
+        "double"
+    ) / n_d
+    t_v = (
+        ((F.col("a") + F.col("b")) * (F.col("c") + F.col("d"))).cast("double")
+        * ((F.col("a") + F.col("c")) * (F.col("b") + F.col("d"))).cast("double")
+    ) / (n_d * n_d * (n_d - F.lit(1.0)))
+    folded = strata.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_strata"),
+        F.sum("a").cast("bigint").alias("sum_a"),
+        ordered_fold_sum(F.col("y"), t_ad).alias("s_ad"),
+        ordered_fold_sum(F.col("y"), t_bc).alias("s_bc"),
+        ordered_fold_sum(F.col("y"), t_e).alias("s_e"),
+        ordered_fold_sum(F.col("y"), t_v).alias("s_v"),
+    )
+    dev = F.col("sum_a").cast("double") - F.col("s_e")
+    return folded.select(
+        "n_strata",
+        "sum_a",
+        F.when(F.col("s_bc") > 0, F.col("s_ad") / F.col("s_bc")).alias("or_mh"),
+        F.when(F.col("s_v") > 0, dev * dev / F.col("s_v")).alias("cmh_chi2"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_ks_uniform / stat_kuiper_uniform — one-sample EDF tests of the
+# md5 ladder against U(0,1)
+
+
+_UNIF_EDF_SQL = """
+        uni AS (
+            SELECT o_orderkey AS key,
+                   CAST('0x' || SUBSTRING(
+                       md5(CAST(o_orderkey AS VARCHAR)), 1, 6) AS BIGINT) AS k
+            FROM orders
+        ),
+        pos AS (
+            SELECT k,
+                   CAST(ROW_NUMBER() OVER (ORDER BY k, key) AS BIGINT) AS i,
+                   CAST(COUNT(*) OVER () AS BIGINT) AS n
+            FROM uni
+        ),
+        edf AS (
+            SELECT MAX(n) AS n,
+                   CAST(MAX(i * 16777216 - n * k) AS BIGINT) AS dp_s,
+                   CAST(MAX(n * k - (i - 1) * 16777216) AS BIGINT) AS dm_s
+            FROM pos
+        )
+"""
+
+
+def _unif_edf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(n, dp_s, dm_s): scaled one-sample EDF deviations of the
+    md5-uniformized order keys vs U(0,1). u_i = k_i / 2^24 with k the
+    first 24 md5 bits — an exact rational, so D+ = max(i/n - u_(i))
+    and D- = max(u_(i) - (i-1)/n) scale to INTEGER maxima
+    dp_s = max(i*2^24 - n*k_i), dm_s = max(n*k_i - (i-1)*2^24).
+    The Spark rank avoids a global sort: 256 buckets on the top 8
+    bits, per-bucket ROW_NUMBER, plus a bucket-offset carry (the
+    stat_ks_two_sample bucket+carry shape); the oracle uses a plain
+    global ROW_NUMBER — same i because both order by (k, key).
+    i*2^24 <= 1.7e16 at sf1000 (ceiling ~sf4e5)."""
+    o = load_table(spark, sf_dir, "orders")
+    uni = o.select(
+        F.col("o_orderkey").alias("key"),
+        F.conv(
+            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 6), 16, 10
+        ).cast("bigint").alias("k"),
+    )
+    bucketed = uni.select("key", "k", F.shiftright("k", 16).alias("bkt"))
+    sizes = bucketed.groupBy("bkt").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    woff = Window.orderBy("bkt").rowsBetween(
+        Window.unboundedPreceding, -1
+    )  # 256-row relation: bounded
+    offs = sizes.select(
+        "bkt",
+        F.coalesce(F.sum("cnt").over(woff), F.lit(0)).cast("bigint").alias("off"),
+    )
+    tot = sizes.agg(F.sum("cnt").cast("bigint").alias("n"))
+    wrn = Window.partitionBy("bkt").orderBy("k", "key")
+    pos = (
+        bucketed.join(F.broadcast(offs), "bkt")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "k",
+            "n",
+            (F.col("off") + F.row_number().over(wrn)).cast("bigint").alias("i"),
+        )
+    )
+    return pos.agg(
+        F.max("n").alias("n"),
+        F.max(F.col("i") * F.lit(16777216) - F.col("n") * F.col("k"))
+        .cast("bigint")
+        .alias("dp_s"),
+        F.max(F.col("n") * F.col("k") - (F.col("i") - 1) * F.lit(16777216))
+        .cast("bigint")
+        .alias("dm_s"),
+    )
+
+
+@register(
+    "stat_ks_uniform",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH {_UNIF_EDF_SQL}
+        SELECT n,
+               CAST(dp_s AS DOUBLE)
+                   / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)) AS d_plus,
+               CAST(dm_s AS DOUBLE)
+                   / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)) AS d_minus,
+               GREATEST(
+                 CAST(dp_s AS DOUBLE)
+                     / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)),
+                 CAST(dm_s AS DOUBLE)
+                     / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)))
+                   AS d_stat
+        FROM edf
+    """,
+)
+def stat_ks_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-sample Kolmogorov-Smirnov test of the engine's md5 key
+    ladder against U(0,1): u = (first 24 md5 bits of the order key) /
+    2^24, D = max(D+, D-) over the empirical distribution function —
+    the uniformity audit behind every md5-lottery operator in this
+    engine (cur_rejection_sample_md5, the bagging weights, the
+    deterministic splits): if the ladder drifted from uniform, D blows
+    past the ~1.36/sqrt(n) band. EDF deviations are computed as exact
+    INTEGER maxima (see _unif_edf: D+ * n * 2^24 = max(i*2^24 - n*k))
+    and cross to double in ONE division each; the Spark side ranks via
+    256-bucket bucket+carry (no global sort at corpus scale), the
+    oracle via plain ROW_NUMBER — identical i by (k, key) ordering.
+    Degenerate n=0 cannot occur (orders is non-empty by schema
+    contract)."""
+    edf = _unif_edf(spark, sf_dir)
+    scale = F.col("n").cast("double") * F.lit(16777216.0)
+    dp = F.col("dp_s").cast("double") / scale
+    dm = F.col("dm_s").cast("double") / scale
+    return edf.select(
+        "n",
+        dp.alias("d_plus"),
+        dm.alias("d_minus"),
+        F.greatest(dp, dm).alias("d_stat"),
+    )
+
+
+@register(
+    "stat_kuiper_uniform",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH {_UNIF_EDF_SQL}
+        SELECT n,
+               (CAST(dp_s AS DOUBLE)
+                    / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)))
+               + (CAST(dm_s AS DOUBLE)
+                    / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)))
+                   AS v_stat
+        FROM edf
+    """,
+)
+def stat_kuiper_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kuiper's V = D+ + D- on the same md5-uniformized EDF as
+    stat_ks_uniform — the rotation-invariant variant that keeps equal
+    sensitivity at the distribution's tails (Kuiper 1960), the right
+    screen for cyclic drift in a hash ladder. Same exact-integer EDF
+    machinery; V is the sum of the two single-division doubles, one
+    fixed-order addition on both engines."""
+    edf = _unif_edf(spark, sf_dir)
+    scale = F.col("n").cast("double") * F.lit(16777216.0)
+    return edf.select(
+        "n",
+        (
+            F.col("dp_s").cast("double") / scale
+            + F.col("dm_s").cast("double") / scale
+        ).alias("v_stat"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_median_polish — Tukey two-way decomposition of the year x
+# segment revenue grid
+
+
+_YEARSEG_CENTS_SQL = f"""
+        daily AS ({SEG_DAILY_SQL}),
+        cell AS (
+            SELECT EXTRACT(year FROM d) AS y, segment,
+                   CAST(CAST(SUM(x) AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+            FROM daily GROUP BY 1, 2
+        ),
+        yrs AS (SELECT DISTINCT y FROM cell),
+        sgs AS (SELECT DISTINCT segment FROM cell),
+        grid AS (
+            SELECT yrs.y, sgs.segment, COALESCE(cell.v, 0) AS v
+            FROM yrs CROSS JOIN sgs
+            LEFT JOIN cell ON cell.y = yrs.y AND cell.segment = sgs.segment
+        )
+"""
+
+
+# lower-median (the (n+1)//2-th order statistic): integer-exact for
+# ANY count parity — the convention this operator pins (a mean-of-
+# middles median would leave integers for the odd 7x5 fixture grid but
+# break exactness if a year or segment ever dropped out)
+_LOMED_ROW = """
+            SELECT *,
+                   CAST(MAX({med}) OVER (PARTITION BY {part}) AS BIGINT) AS med
+            FROM (
+                SELECT *,
+                       CASE WHEN ROW_NUMBER() OVER (
+                                PARTITION BY {part} ORDER BY {val}, {tie})
+                            = (COUNT(*) OVER (PARTITION BY {part}) + 1) / 2
+                            THEN {val} END AS {med}
+                FROM {src}
+            )
+"""
+
+
+def _lomed(df: DataFrame, part: str, val: str, tie: str) -> DataFrame:
+    """Attach the lower median of ``val`` within ``part`` as `med`."""
+    wrn = Window.partitionBy(part).orderBy(val, tie)
+    wall = Window.partitionBy(part)
+    picked = df.withColumn(
+        "_pick",
+        F.when(
+            F.row_number().over(wrn)
+            == (F.count(F.lit(1)).over(wall) + 1) / 2,
+            F.col(val),
+        ),
+    )
+    return picked.withColumn(
+        "med", F.max("_pick").over(wall).cast("bigint")
+    ).drop("_pick")
+
+
+@register(
+    "stat_median_polish",
+    tags=("stats", "window"),
+    oracle=f"""
+        WITH {_YEARSEG_CENTS_SQL},
+        r1 AS (
+            SELECT y, segment, v - med AS v, med AS ay FROM (
+                {_LOMED_ROW.format(src="grid", part="y", val="v",
+                                   tie="segment", med="m1")}
+            )
+        ),
+        r2 AS (
+            SELECT y, segment, v - med AS v, ay, med AS bs FROM (
+                {_LOMED_ROW.format(src="r1", part="segment", val="v",
+                                   tie="y", med="m2")}
+            )
+        ),
+        r3 AS (
+            SELECT y, segment, v - med AS v, ay + med AS ay, bs FROM (
+                {_LOMED_ROW.format(src="r2", part="y", val="v",
+                                   tie="segment", med="m3")}
+            )
+        ),
+        r4 AS (
+            SELECT y, segment, v - med AS v, ay, bs + med AS bs FROM (
+                {_LOMED_ROW.format(src="r3", part="segment", val="v",
+                                   tie="y", med="m4")}
+            )
+        ),
+        ma AS (
+            SELECT CAST(MAX(CASE WHEN rn = (cnt + 1) / 2 THEN ay END)
+                        AS BIGINT) AS med_a
+            FROM (SELECT ay,
+                         ROW_NUMBER() OVER (ORDER BY ay, y) AS rn,
+                         COUNT(*) OVER () AS cnt
+                  FROM (SELECT DISTINCT y, ay FROM r4))
+        ),
+        mb AS (
+            SELECT CAST(MAX(CASE WHEN rn = (cnt + 1) / 2 THEN bs END)
+                        AS BIGINT) AS med_b
+            FROM (SELECT bs,
+                         ROW_NUMBER() OVER (ORDER BY bs, segment) AS rn,
+                         COUNT(*) OVER () AS cnt
+                  FROM (SELECT DISTINCT segment, bs FROM r4))
+        )
+        SELECT CAST(r4.y AS BIGINT) AS year, r4.segment,
+               CAST(r4.v AS DOUBLE) / CAST(100 AS DOUBLE) AS residual,
+               CAST(r4.ay - ma.med_a AS DOUBLE) / CAST(100 AS DOUBLE)
+                   AS row_effect,
+               CAST(r4.bs - mb.med_b AS DOUBLE) / CAST(100 AS DOUBLE)
+                   AS col_effect,
+               CAST(ma.med_a + mb.med_b AS DOUBLE) / CAST(100 AS DOUBLE)
+                   AS overall
+        FROM r4 CROSS JOIN ma CROSS JOIN mb
+        ORDER BY year, segment
+    """,
+)
+def stat_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tukey median polish of the year x segment revenue grid — the
+    robust two-way decomposition v = overall + row + col + residual
+    (Tukey 1977, EDA ch. 11), TWO full row-then-column sweeps with
+    effects re-centered by their own medians at the end. Convention
+    pinned for exactness: every median is the LOWER median (the
+    (n+1)//2-th order statistic, deterministic tie-break by the entity
+    key), so the whole decomposition stays in INTEGER cents end-to-end
+    for any grid parity — each cell crosses to double exactly once at
+    presentation (/100 in double, identical both engines). Absent
+    cells enter as exact 0 via the full grid (the fin_active_share
+    lesson). Scale: corpus work is the shared daily agg; all four
+    sweeps and the effect re-centering run on the |years| x |segments|
+    grid relation (35 rows) with bounded windows."""
+    daily = seg_daily(spark, sf_dir)
+    cell = daily.groupBy(
+        F.year("d").alias("y"), "segment"
+    ).agg(
+        (F.sum("x").cast("decimal(18,2)") * 100).cast("bigint").alias("v")
+    )
+    yrs = cell.select("y").distinct()
+    sgs = cell.select("segment").distinct()
+    grid = (
+        yrs.crossJoin(F.broadcast(sgs))
+        .join(F.broadcast(cell), ["y", "segment"], "left")
+        .select(
+            "y", "segment", F.coalesce(F.col("v"), F.lit(0)).alias("v")
+        )
+    )
+    r1 = _lomed(grid, "y", "v", "segment").select(
+        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
+        F.col("med").alias("ay"),
+    )
+    r2 = _lomed(r1, "segment", "v", "y").select(
+        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
+        "ay", F.col("med").alias("bs"),
+    )
+    r3 = _lomed(r2, "y", "v", "segment").select(
+        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
+        (F.col("ay") + F.col("med")).alias("ay"), "bs",
+    )
+    r4 = _lomed(r3, "segment", "v", "y").select(
+        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
+        "ay", (F.col("bs") + F.col("med")).alias("bs"),
+    )
+
+    def _global_lomed(df, val, tie, out):
+        wrn = Window.orderBy(val, tie)  # effect-sized relation only
+        wall = Window.partitionBy(F.lit(1))
+        return (
+            df.withColumn(
+                "_pick",
+                F.when(
+                    F.row_number().over(wrn)
+                    == (F.count(F.lit(1)).over(wall) + 1) / 2,
+                    F.col(val),
+                ),
+            )
+            .agg(F.max("_pick").cast("bigint").alias(out))
+        )
+
+    ma = _global_lomed(r4.select("y", "ay").distinct(), "ay", "y", "med_a")
+    mb = _global_lomed(
+        r4.select("segment", "bs").distinct(), "bs", "segment", "med_b"
+    )
+    return (
+        r4.crossJoin(F.broadcast(ma))
+        .crossJoin(F.broadcast(mb))
+        .select(
+            F.col("y").cast("bigint").alias("year"),
+            "segment",
+            (F.col("v").cast("double") / F.lit(100.0)).alias("residual"),
+            ((F.col("ay") - F.col("med_a")).cast("double") / F.lit(100.0))
+            .alias("row_effect"),
+            ((F.col("bs") - F.col("med_b")).cast("double") / F.lit(100.0))
+            .alias("col_effect"),
+            ((F.col("med_a") + F.col("med_b")).cast("double") / F.lit(100.0))
+            .alias("overall"),
+        )
+        .orderBy("year", "segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_trimmed_mean / stat_bowley_skew — bucket+carry order statistics
+
+
+_CENTS_CUM_SQL = """
+        cents AS (
+            SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS v
+            FROM orders
+        ),
+        vals AS (
+            SELECT v, CAST(COUNT(*) AS BIGINT) AS cnt
+            FROM cents GROUP BY v
+        ),
+        cum AS (
+            SELECT v, cnt,
+                   CAST(SUM(cnt) OVER (ORDER BY v) AS BIGINT) AS c,
+                   CAST(SUM(cnt) OVER () AS BIGINT) AS n
+            FROM vals
+        )
+"""
+
+
+def _cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(v, cnt, c, n): distinct order-total cents with cumulative and
+    total counts — the bucket+carry rank relation shared by the exact
+    order-statistic operators. The Spark cumulative runs over the
+    DISTINCT-VALUE relation (value-domain-bounded), not corpus rows;
+    the oracle's plain window is equivalent on the same relation."""
+    o = load_table(spark, sf_dir, "orders")
+    cents = o.select(
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("v")
+    )
+    vals = cents.groupBy("v").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    wv = Window.orderBy("v")  # distinct-value relation: domain-bounded
+    return vals.select(
+        "v",
+        "cnt",
+        F.sum("cnt").over(wv).cast("bigint").alias("c"),
+        F.sum("cnt").over(Window.partitionBy(F.lit(1)))
+        .cast("bigint")
+        .alias("n"),
+    )
+
+
+@register(
+    "stat_trimmed_mean",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH {_CENTS_CUM_SQL},
+        parts AS (
+            SELECT n, n // 20 AS k,
+                   CAST(SUM(CAST(v AS DECIMAL(19,0)) * cnt) AS DECIMAL(38,0))
+                       AS total,
+                   CAST(SUM(CAST(v AS DECIMAL(19,0))
+                            * LEAST(cnt, GREATEST(
+                                CAST(0 AS BIGINT), n // 20 - (c - cnt))))
+                        AS DECIMAL(38,0)) AS bot,
+                   CAST(SUM(CAST(v AS DECIMAL(19,0))
+                            * LEAST(cnt, GREATEST(
+                                CAST(0 AS BIGINT), c - (n - n // 20))))
+                        AS DECIMAL(38,0)) AS top
+            FROM cum GROUP BY n
+        )
+        SELECT n, CAST(k AS BIGINT) AS k_each_side,
+               CASE WHEN n - 2 * k > 0 THEN
+                 CAST(CAST(total - bot - top AS VARCHAR) AS DOUBLE)
+                   / (CAST(n - 2 * k AS DOUBLE) * CAST(100 AS DOUBLE))
+               END AS trimmed_mean
+        FROM parts
+    """,
+)
+def stat_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """5%-each-side trimmed mean of order value: drop the k = n div 20
+    smallest and largest observations (integer k, convention pinned)
+    and average the middle — the robust location estimate that pairs
+    with stat_median_polish's robust decomposition. NO global sort:
+    the bottom-k and top-k sums come from the distinct-value
+    bucket+carry relation (each value contributes
+    clamp(k - rank_before, 0, cnt) tail members — exact integer
+    clamps), all three sums accumulate in DECIMAL, one VARCHAR-routed
+    division at the edge. Degenerate n <= 2k NULLs identically. Corpus
+    work: one value-histogram agg; the cumulative rides the
+    domain-bounded distinct-value relation."""
+    cum = _cents_cum(spark, sf_dir)
+    k = F.expr("n div 20")
+    vdec = F.col("v").cast("decimal(19,0)")
+    bot_take = F.least(
+        F.col("cnt"),
+        F.greatest(F.lit(0).cast("bigint"), k - (F.col("c") - F.col("cnt"))),
+    )
+    top_take = F.least(
+        F.col("cnt"),
+        F.greatest(
+            F.lit(0).cast("bigint"), F.col("c") - (F.col("n") - k)
+        ),
+    )
+    parts = cum.groupBy("n").agg(
+        as_d(
+            F.sum(vdec * F.col("cnt")).cast("decimal(38,0)")
+            - F.sum(vdec * bot_take).cast("decimal(38,0)")
+            - F.sum(vdec * top_take).cast("decimal(38,0)")
+        ).alias("mid"),
+    )
+    kk = F.expr("n div 20")
+    return parts.select(
+        "n",
+        kk.cast("bigint").alias("k_each_side"),
+        F.when(
+            F.col("n") - 2 * kk > 0,
+            F.col("mid")
+            / ((F.col("n") - 2 * kk).cast("double") * F.lit(100.0)),
+        ).alias("trimmed_mean"),
+    )
+
+
+@register(
+    "stat_bowley_skew",
+    tags=("stats", "window"),
+    oracle=f"""
+        WITH {_CENTS_CUM_SQL},
+        qs AS (
+            SELECT
+                MAX(CASE WHEN c - cnt < (n + 3) // 4
+                          AND c >= (n + 3) // 4 THEN v END) AS q1,
+                MAX(CASE WHEN c - cnt < (n + 1) // 2
+                          AND c >= (n + 1) // 2 THEN v END) AS q2,
+                MAX(CASE WHEN c - cnt < (3 * n + 1) // 4
+                          AND c >= (3 * n + 1) // 4 THEN v END) AS q3,
+                MAX(n) AS n
+            FROM cum
+        )
+        SELECT n, CAST(q1 AS BIGINT) AS q1_cents,
+               CAST(q2 AS BIGINT) AS q2_cents,
+               CAST(q3 AS BIGINT) AS q3_cents,
+               CASE WHEN q3 > q1 THEN
+                 CAST(q3 + q1 - 2 * q2 AS DOUBLE) / CAST(q3 - q1 AS DOUBLE)
+               END AS bowley_skew
+        FROM qs
+    """,
+)
+def stat_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bowley (quartile) skewness of order value: (Q3 + Q1 - 2*Q2) /
+    (Q3 - Q1) — the outlier-immune skew that complements the moment
+    skew in stat_jarque_bera / agg_skew_kurtosis_exact. Quartiles are
+    PINNED exact order statistics (ranks ceil(n/4), ceil(n/2),
+    ceil(3n/4) — integer rank arithmetic, no engine interpolation
+    convention), located on the distinct-value bucket+carry cumulative
+    (the value whose rank range covers the target — one conditional
+    max, no global sort). Numerator/denominator are exact integers;
+    one guarded division. IQR = 0 NULLs identically."""
+    cum = _cents_cum(spark, sf_dir)
+
+    def order_stat(rank_expr):
+        return F.max(
+            F.when(
+                (F.col("c") - F.col("cnt") < rank_expr)
+                & (F.col("c") >= rank_expr),
+                F.col("v"),
+            )
+        )
+
+    r1 = F.expr("(n + 3) div 4")
+    r2 = F.expr("(n + 1) div 2")
+    r3 = F.expr("(3 * n + 1) div 4")
+    qs = cum.agg(
+        order_stat(r1).alias("q1"),
+        order_stat(r2).alias("q2"),
+        order_stat(r3).alias("q3"),
+        F.max("n").alias("n"),
+    )
+    return qs.select(
+        "n",
+        F.col("q1").cast("bigint").alias("q1_cents"),
+        F.col("q2").cast("bigint").alias("q2_cents"),
+        F.col("q3").cast("bigint").alias("q3_cents"),
+        F.when(
+            F.col("q3") > F.col("q1"),
+            (F.col("q3") + F.col("q1") - 2 * F.col("q2")).cast("double")
+            / (F.col("q3") - F.col("q1")).cast("double"),
+        ).alias("bowley_skew"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_gk_lambda — Goodman-Kruskal lambda (proportional reduction in
+# prediction error), priority x status
+
+
+@register(
+    "stat_gk_lambda",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH cells AS (
+            SELECT o_orderpriority AS x, o_orderstatus AS y,
+                   CAST(COUNT(*) AS BIGINT) AS n
+            FROM orders GROUP BY 1, 2
+        ),
+        rowmax AS (
+            SELECT x, MAX(n) AS m FROM cells GROUP BY x
+        ),
+        colmax AS (
+            SELECT y, MAX(n) AS m FROM (
+                SELECT y, CAST(SUM(n) AS BIGINT) AS n FROM cells GROUP BY y
+            ) GROUP BY ()
+        ),
+        xmax AS (
+            SELECT MAX(n) AS m FROM (
+                SELECT x, CAST(SUM(n) AS BIGINT) AS n FROM cells GROUP BY x
+            )
+        ),
+        ymax_in_rows AS (
+            SELECT CAST(SUM(m) AS BIGINT) AS s FROM rowmax
+        ),
+        xmax_in_cols AS (
+            SELECT CAST(SUM(m) AS BIGINT) AS s FROM (
+                SELECT y, MAX(n) AS m FROM cells GROUP BY y
+            )
+        ),
+        tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n FROM cells),
+        marg AS (
+            SELECT (SELECT MAX(s) FROM (
+                        SELECT CAST(SUM(n) AS BIGINT) AS s
+                        FROM cells GROUP BY y)) AS max_col,
+                   (SELECT MAX(s) FROM (
+                        SELECT CAST(SUM(n) AS BIGINT) AS s
+                        FROM cells GROUP BY x)) AS max_row
+        )
+        SELECT t.n, m.max_col, m.max_row,
+               yr.s AS sum_row_max, xc.s AS sum_col_max,
+               CASE WHEN t.n > m.max_col THEN
+                 CAST(yr.s - m.max_col AS DOUBLE)
+                   / CAST(t.n - m.max_col AS DOUBLE) END AS lambda_y_given_x,
+               CASE WHEN t.n > m.max_row THEN
+                 CAST(xc.s - m.max_row AS DOUBLE)
+                   / CAST(t.n - m.max_row AS DOUBLE) END AS lambda_x_given_y
+        FROM tot t, marg m, ymax_in_rows yr, xmax_in_cols xc
+    """,
+)
+def stat_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Goodman-Kruskal lambda between order priority (X) and order
+    status (Y): the proportional reduction in prediction error when
+    the modal Y per X replaces the global modal Y (Goodman & Kruskal
+    1954) — the PRE companion to gamma (stat_gk_gamma) for NOMINAL
+    pairs, where rank concordance is undefined. Everything up to the
+    final division is exact BIGINT arithmetic on the 5x3 cell grid
+    (modal cells, modal marginals, their sums); each lambda is ONE
+    guarded double division (all-one-column tables make the
+    denominator 0 -> NULL identically). Corpus work: one scan + one
+    grid-sized agg — the same shape at any SF."""
+    o = load_table(spark, sf_dir, "orders")
+    cells = (
+        o.groupBy(
+            F.col("o_orderpriority").alias("x"),
+            F.col("o_orderstatus").alias("y"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        .persist()
+    )
+    row_max = cells.groupBy("x").agg(F.max("n").alias("m"))
+    col_tot = cells.groupBy("y").agg(F.sum("n").cast("bigint").alias("s"))
+    row_tot = cells.groupBy("x").agg(F.sum("n").cast("bigint").alias("s"))
+    col_max_in = cells.groupBy("y").agg(F.max("n").alias("m"))
+    parts = (
+        cells.agg(F.sum("n").cast("bigint").alias("n"))
+        .crossJoin(F.broadcast(col_tot.agg(F.max("s").alias("max_col"))))
+        .crossJoin(F.broadcast(row_tot.agg(F.max("s").alias("max_row"))))
+        .crossJoin(
+            F.broadcast(
+                row_max.agg(F.sum("m").cast("bigint").alias("sum_row_max"))
+            )
+        )
+        .crossJoin(
+            F.broadcast(
+                col_max_in.agg(F.sum("m").cast("bigint").alias("sum_col_max"))
+            )
+        )
+    )
+    return parts.select(
+        "n",
+        "max_col",
+        "max_row",
+        "sum_row_max",
+        "sum_col_max",
+        F.when(
+            F.col("n") > F.col("max_col"),
+            (F.col("sum_row_max") - F.col("max_col")).cast("double")
+            / (F.col("n") - F.col("max_col")).cast("double"),
+        ).alias("lambda_y_given_x"),
+        F.when(
+            F.col("n") > F.col("max_row"),
+            (F.col("sum_col_max") - F.col("max_row")).cast("double")
+            / (F.col("n") - F.col("max_row")).cast("double"),
+        ).alias("lambda_x_given_y"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_uncertainty_coeff — Theil's U (entropy-based association)
+
+
+@register(
+    "stat_uncertainty_coeff",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH cells AS (
+            SELECT o_orderpriority AS x, o_orderstatus AS y,
+                   CAST(COUNT(*) AS BIGINT) AS n
+            FROM orders GROUP BY 1, 2
+        ),
+        tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n FROM cells),
+        hx AS (
+            SELECT -CAST(CAST(SUM(s * CAST(ln(CAST(s AS DOUBLE)
+                        / CAST(t.n AS DOUBLE)) AS DECIMAL(12,6)))
+                     AS VARCHAR) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
+            FROM (SELECT x, CAST(SUM(n) AS BIGINT) AS s
+                  FROM cells GROUP BY x) CROSS JOIN tot t
+            GROUP BY t.n
+        ),
+        hy AS (
+            SELECT -CAST(CAST(SUM(s * CAST(ln(CAST(s AS DOUBLE)
+                        / CAST(t.n AS DOUBLE)) AS DECIMAL(12,6)))
+                     AS VARCHAR) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
+            FROM (SELECT y, CAST(SUM(n) AS BIGINT) AS s
+                  FROM cells GROUP BY y) CROSS JOIN tot t
+            GROUP BY t.n
+        ),
+        hxy AS (
+            SELECT -CAST(CAST(SUM(c.n * CAST(ln(CAST(c.n AS DOUBLE)
+                        / CAST(t.n AS DOUBLE)) AS DECIMAL(12,6)))
+                     AS VARCHAR) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
+            FROM cells c CROSS JOIN tot t
+            GROUP BY t.n
+        )
+        SELECT t.n, hx.h AS h_x, hy.h AS h_y, hxy.h AS h_xy,
+               CASE WHEN hy.h > 0 THEN
+                 ((hx.h + hy.h) - hxy.h) / hy.h END AS u_y_given_x,
+               CASE WHEN hx.h > 0 THEN
+                 ((hx.h + hy.h) - hxy.h) / hx.h END AS u_x_given_y
+        FROM tot t, hx, hy, hxy
+    """,
+)
+def stat_uncertainty_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil's uncertainty coefficient between order priority and
+    order status: U(Y|X) = (H(X) + H(Y) - H(X,Y)) / H(Y) — the
+    entropy-based (mutual-information-normalized) association measure
+    for nominal pairs, completing the round-12/13 association family
+    (gamma = ordinal concordance, lambda = modal PRE, U = information).
+    Engine-exact via the quantized-log recipe (text_ngram_entropy /
+    dq_column_entropy precedent): each ln(p) quantizes to
+    DECIMAL(12,6) per distinct cell/marginal count, the weighted sums
+    are exact decimal dot products crossing to double ONCE via
+    VARCHAR, and the final U is one identically-parenthesized double
+    expression with a degenerate-entropy NULL guard (single-category
+    marginals give H = 0). Grid-sized state after one scan."""
+    o = load_table(spark, sf_dir, "orders")
+    cells = (
+        o.groupBy(
+            F.col("o_orderpriority").alias("x"),
+            F.col("o_orderstatus").alias("y"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        .persist()
+    )
+    tot = cells.agg(F.sum("n").cast("bigint").alias("nt"))
+
+    def _h(counts: DataFrame, cname: str):
+        lnq = F.log(
+            F.col(cname).cast("double") / F.col("nt").cast("double")
+        ).cast("decimal(12,6)")
+        return counts.crossJoin(F.broadcast(tot)).agg(
+            (
+                (-as_d(F.sum(F.col(cname) * lnq)))
+                / F.max("nt").cast("double")
+            ).alias("h")
+        )
+
+    hx = _h(
+        cells.groupBy("x").agg(F.sum("n").cast("bigint").alias("s")), "s"
+    ).select(F.col("h").alias("h_x"))
+    hy = _h(
+        cells.groupBy("y").agg(F.sum("n").cast("bigint").alias("s")), "s"
+    ).select(F.col("h").alias("h_y"))
+    hxy = _h(cells, "n").select(F.col("h").alias("h_xy"))
+    return (
+        tot.select(F.col("nt").alias("n"))
+        .crossJoin(F.broadcast(hx))
+        .crossJoin(F.broadcast(hy))
+        .crossJoin(F.broadcast(hxy))
+        .select(
+            "n",
+            "h_x",
+            "h_y",
+            "h_xy",
+            F.when(
+                F.col("h_y") > 0,
+                ((F.col("h_x") + F.col("h_y")) - F.col("h_xy"))
+                / F.col("h_y"),
+            ).alias("u_y_given_x"),
+            F.when(
+                F.col("h_x") > 0,
+                ((F.col("h_x") + F.col("h_y")) - F.col("h_xy"))
+                / F.col("h_x"),
+            ).alias("u_x_given_y"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_chow_test — structural break in price ~ quantity at a date split
+
+
+_CHOW_SPLIT = "1998-07-01"
+
+
+# RSS * n from the centered cross-products, ONE pinned double
+# expression per segment: rss = (syy_c - sxy_c*sxy_c/sxx_c) / n where
+# each _c = n*S2 - S1*S1 computed in doubles AFTER each exact decimal
+# sum crosses via VARCHAR (the products exceed DECIMAL(38) range, and
+# identical IEEE ops on identical inputs keep both engines bit-equal).
+_CHOW_RSS_SQL = (
+    "((({p}syy - {p}sy * {p}sy / {p}n)"
+    " - ({p}sxy - {p}sx * {p}sy / {p}n)"
+    " * ({p}sxy - {p}sx * {p}sy / {p}n)"
+    " / ({p}sxx - {p}sx * {p}sx / {p}n)))"
+)
+
+
+def _chow_sums_sql(tag: str, pred: str) -> str:
+    return f"""
+            CAST(SUM(CASE WHEN {pred} THEN 1 ELSE 0 END) AS BIGINT)
+                AS n_{tag},
+            SUM(CASE WHEN {pred} THEN xq ELSE 0 END) AS sx_{tag},
+            SUM(CASE WHEN {pred} THEN yq ELSE 0 END) AS sy_{tag},
+            SUM(CASE WHEN {pred} THEN xq * xq ELSE 0 END) AS sxx_{tag},
+            SUM(CASE WHEN {pred} THEN CAST(xq AS DECIMAL(38,0)) * yq
+                     ELSE 0 END) AS sxy_{tag},
+            SUM(CASE WHEN {pred} THEN CAST(yq AS DECIMAL(38,0)) * yq
+                     ELSE 0 END) AS syy_{tag}"""
+
+
+@register(
+    "stat_chow_test",
+    tags=("stats", "regression", "agg"),
+    oracle=f"""
+        WITH base AS (
+            SELECT CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)
+                       AS xq,
+                   CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
+                        AS BIGINT) AS yq,
+                   (CAST(l_shipdate AS DATE) < DATE '{_CHOW_SPLIT}') AS pre
+            FROM lineitem
+        ),
+        sums AS (
+            SELECT
+            {_chow_sums_sql('1', 'pre')},
+            {_chow_sums_sql('2', 'NOT pre')}
+            FROM base
+        ),
+        wide AS (
+            SELECT n_1, n_2,
+                   CAST(n_1 AS DOUBLE) AS n1d, CAST(n_2 AS DOUBLE) AS n2d,
+                   CAST(n_1 + n_2 AS DOUBLE) AS npd,
+                   CAST(CAST(sx_1 AS VARCHAR) AS DOUBLE) AS sx1,
+                   CAST(CAST(sy_1 AS VARCHAR) AS DOUBLE) AS sy1,
+                   CAST(CAST(sxx_1 AS VARCHAR) AS DOUBLE) AS sxx1,
+                   CAST(CAST(sxy_1 AS VARCHAR) AS DOUBLE) AS sxy1,
+                   CAST(CAST(syy_1 AS VARCHAR) AS DOUBLE) AS syy1,
+                   CAST(CAST(sx_2 AS VARCHAR) AS DOUBLE) AS sx2,
+                   CAST(CAST(sy_2 AS VARCHAR) AS DOUBLE) AS sy2,
+                   CAST(CAST(sxx_2 AS VARCHAR) AS DOUBLE) AS sxx2,
+                   CAST(CAST(sxy_2 AS VARCHAR) AS DOUBLE) AS sxy2,
+                   CAST(CAST(syy_2 AS VARCHAR) AS DOUBLE) AS syy2,
+                   CAST(CAST(sx_1 + sx_2 AS VARCHAR) AS DOUBLE) AS sxp,
+                   CAST(CAST(sy_1 + sy_2 AS VARCHAR) AS DOUBLE) AS syp,
+                   CAST(CAST(sxx_1 + sxx_2 AS VARCHAR) AS DOUBLE) AS sxxp,
+                   CAST(CAST(sxy_1 + sxy_2 AS VARCHAR) AS DOUBLE) AS sxyp,
+                   CAST(CAST(syy_1 + syy_2 AS VARCHAR) AS DOUBLE) AS syyp
+            FROM sums
+        ),
+        rss AS (
+            SELECT n_1, n_2,
+                   {_CHOW_RSS_SQL.format(p='p_')} AS rss_p,
+                   {_CHOW_RSS_SQL.format(p='a_')} AS rss_1,
+                   {_CHOW_RSS_SQL.format(p='b_')} AS rss_2
+            FROM (
+                SELECT n_1, n_2,
+                       npd AS p_n, sxp AS p_sx, syp AS p_sy,
+                       sxxp AS p_sxx, sxyp AS p_sxy, syyp AS p_syy,
+                       n1d AS a_n, sx1 AS a_sx, sy1 AS a_sy,
+                       sxx1 AS a_sxx, sxy1 AS a_sxy, syy1 AS a_syy,
+                       n2d AS b_n, sx2 AS b_sx, sy2 AS b_sy,
+                       sxx2 AS b_sxx, sxy2 AS b_sxy, syy2 AS b_syy
+                FROM wide
+            )
+        )
+        SELECT n_1 AS n_pre, n_2 AS n_post, rss_p AS rss_pooled,
+               (rss_1 + rss_2) AS rss_segmented,
+               CASE WHEN n_1 > 2 AND n_2 > 2 AND (rss_1 + rss_2) > 0 THEN
+                 ((rss_p - (rss_1 + rss_2)) / CAST('2.0' AS DOUBLE))
+                   / ((rss_1 + rss_2)
+                      / CAST(n_1 + n_2 - 4 AS DOUBLE)) END AS f_stat
+        FROM rss
+    """,
+)
+def stat_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chow structural-break test for the price ~ quantity regression
+    at a {split} ship-date split: F = ((RSS_pooled - RSS_1 - RSS_2)/k)
+    / ((RSS_1 + RSS_2)/(n - 2k)) with k = 2 parameters per segment
+    (Chow 1960) — the regime-change screen a pricing-drift monitor
+    runs before trusting one global fit. Exactness: x (quantity) and
+    y (price) quantize to exact cents BIGINTs; the six sufficient
+    sums per segment accumulate in DECIMAL(38,0) (one scan, 12
+    conditional sums); pooled sums are exact decimal ADDITIONS of the
+    segment sums (never re-scanned); every sum crosses to double once
+    via VARCHAR, and each RSS is the same identically-parenthesized
+    centered-cross-product expression on both engines. Degenerate
+    guards (segment too small, zero residual variance) NULL the F
+    identically. The cross-products exceed DECIMAL(38) range, so they
+    are formed in doubles AFTER the crossing — same IEEE ops, same
+    bits, both engines.""".replace("{split}", _CHOW_SPLIT)
+    li = load_table(spark, sf_dir, "lineitem")
+    base = li.select(
+        (F.col("l_quantity").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("xq"),
+        (F.col("l_extendedprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("yq"),
+        (F.col("l_shipdate").cast("date") < F.lit(_CHOW_SPLIT).cast("date"))
+        .alias("pre"),
+    )
+
+    def seg_aggs(tag: str, pred):
+        z = F.lit(0)
+        return [
+            F.sum(F.when(pred, 1).otherwise(0)).cast("bigint").alias(f"n_{tag}"),
+            F.sum(F.when(pred, F.col("xq")).otherwise(z)).alias(f"sx_{tag}"),
+            F.sum(F.when(pred, F.col("yq")).otherwise(z)).alias(f"sy_{tag}"),
+            F.sum(F.when(pred, F.col("xq") * F.col("xq")).otherwise(z)).alias(
+                f"sxx_{tag}"
+            ),
+            F.sum(
+                F.when(
+                    pred, F.col("xq").cast("decimal(38,0)") * F.col("yq")
+                ).otherwise(z.cast("decimal(38,0)"))
+            ).alias(f"sxy_{tag}"),
+            F.sum(
+                F.when(
+                    pred, F.col("yq").cast("decimal(38,0)") * F.col("yq")
+                ).otherwise(z.cast("decimal(38,0)"))
+            ).alias(f"syy_{tag}"),
+        ]
+
+    sums = base.agg(
+        *(seg_aggs("1", F.col("pre")) + seg_aggs("2", ~F.col("pre")))
+    )
+
+    def rss(n, sx, sy, sxx, sxy, syy):
+        return (syy - sy * sy / n) - (sxy - sx * sy / n) * (
+            sxy - sx * sy / n
+        ) / (sxx - sx * sx / n)
+
+    wide = sums.select(
+        "n_1",
+        "n_2",
+        F.col("n_1").cast("double").alias("n1d"),
+        F.col("n_2").cast("double").alias("n2d"),
+        (F.col("n_1") + F.col("n_2")).cast("double").alias("npd"),
+        *[
+            as_d(F.col(f"{s}_{t}")).alias(f"{s}{t}")
+            for t in ("1", "2")
+            for s in ("sx", "sy", "sxx", "sxy", "syy")
+        ],
+        *[
+            as_d(F.col(f"{s}_1") + F.col(f"{s}_2")).alias(f"{s}p")
+            for s in ("sx", "sy", "sxx", "sxy", "syy")
+        ],
+    )
+    out = wide.select(
+        F.col("n_1").alias("n_pre"),
+        F.col("n_2").alias("n_post"),
+        rss(
+            F.col("npd"), F.col("sxp"), F.col("syp"),
+            F.col("sxxp"), F.col("sxyp"), F.col("syyp"),
+        ).alias("rss_pooled"),
+        (
+            rss(
+                F.col("n1d"), F.col("sx1"), F.col("sy1"),
+                F.col("sxx1"), F.col("sxy1"), F.col("syy1"),
+            )
+            + rss(
+                F.col("n2d"), F.col("sx2"), F.col("sy2"),
+                F.col("sxx2"), F.col("sxy2"), F.col("syy2"),
+            )
+        ).alias("rss_segmented"),
+    )
+    return out.select(
+        "n_pre",
+        "n_post",
+        "rss_pooled",
+        "rss_segmented",
+        F.when(
+            (F.col("n_pre") > 2)
+            & (F.col("n_post") > 2)
+            & (F.col("rss_segmented") > 0),
+            (
+                (F.col("rss_pooled") - F.col("rss_segmented"))
+                / F.lit("2.0").cast("double")
+            )
+            / (
+                F.col("rss_segmented")
+                / (F.col("n_pre") + F.col("n_post") - 4).cast("double")
+            ),
+        ).alias("f_stat"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_g_test — log-likelihood-ratio independence test (the G companion
+# to the Pearson chi-square)
+
+
+@register(
+    "stat_g_test",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH cells AS (
+            SELECT o_orderpriority AS x, o_orderstatus AS y,
+                   CAST(COUNT(*) AS BIGINT) AS o
+            FROM orders GROUP BY 1, 2
+        ),
+        rows_t AS (SELECT x, CAST(SUM(o) AS BIGINT) AS r FROM cells GROUP BY x),
+        cols_t AS (SELECT y, CAST(SUM(o) AS BIGINT) AS c FROM cells GROUP BY y),
+        tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
+        dims AS (
+            SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM rows_t) AS nr,
+                   (SELECT CAST(COUNT(*) AS BIGINT) FROM cols_t) AS nc
+        ),
+        terms AS (
+            SELECT cl.o * CAST(ln((CAST(cl.o AS DOUBLE) * CAST(t.n AS DOUBLE))
+                       / (CAST(r.r AS DOUBLE) * CAST(c.c AS DOUBLE)))
+                     AS DECIMAL(12,6)) AS term
+            FROM cells cl
+            JOIN rows_t r ON r.x = cl.x
+            JOIN cols_t c ON c.y = cl.y
+            CROSS JOIN tot t
+        )
+        SELECT t.n,
+               CAST((d.nr - 1) * (d.nc - 1) AS BIGINT) AS df,
+               CAST('2.0' AS DOUBLE)
+                 * CAST(CAST(SUM(term) AS VARCHAR) AS DOUBLE) AS g_stat
+        FROM terms, tot t, dims d
+        GROUP BY t.n, d.nr, d.nc
+    """,
+)
+def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G-test of independence (log-likelihood ratio) on the priority x
+    status grid: G = 2 sum O ln(O/E), E = row*col/n — the
+    information-theoretic companion to the Pearson chi-square
+    (stat_chi2_gof family; G is additive across partitions of the
+    table, which chi-square is not, so hierarchical drill-downs
+    decompose exactly). Engine-exact via the quantized-log recipe:
+    O/E is formed as the pinned ratio (O*n)/(r*c) of exact integers,
+    its ln quantizes to DECIMAL(12,6) per cell, the weighted sum is an
+    exact decimal dot product crossing to double ONCE, and G is one
+    final multiplication. Empty cells contribute nothing (inner join
+    on observed cells — 0 ln 0 = 0, the standard convention). One scan
+    + grid-sized joins."""
+    o = load_table(spark, sf_dir, "orders")
+    cells = (
+        o.groupBy(
+            F.col("o_orderpriority").alias("x"),
+            F.col("o_orderstatus").alias("y"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
+        .persist()
+    )
+    rows_t = cells.groupBy("x").agg(F.sum("o").cast("bigint").alias("r"))
+    cols_t = cells.groupBy("y").agg(F.sum("o").cast("bigint").alias("c"))
+    tot = cells.agg(F.sum("o").cast("bigint").alias("n"))
+    dims = rows_t.agg(F.count(F.lit(1)).cast("bigint").alias("nr")).crossJoin(
+        F.broadcast(cols_t.agg(F.count(F.lit(1)).cast("bigint").alias("nc")))
+    )
+    lnq = F.log(
+        (F.col("o").cast("double") * F.col("n").cast("double"))
+        / (F.col("r").cast("double") * F.col("c").cast("double"))
+    ).cast("decimal(12,6)")
+    terms = (
+        cells.join(rows_t, "x")
+        .join(cols_t, "y")
+        .crossJoin(F.broadcast(tot))
+        .select("n", (F.col("o") * lnq).alias("term"))
+    )
+    return (
+        terms.groupBy("n")
+        .agg(
+            (
+                F.lit("2.0").cast("double")
+                * F.sum("term").cast("string").cast("double")
+            ).alias("g_stat")
+        )
+        .crossJoin(F.broadcast(dims))
+        .select(
+            "n",
+            ((F.col("nr") - 1) * (F.col("nc") - 1)).cast("bigint").alias("df"),
+            "g_stat",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_cliffs_delta — ordinal effect size between two groups
+
+
+@register(
+    "stat_cliffs_delta",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH cells AS MATERIALIZED (
+            SELECT l_returnflag AS g, CAST(l_quantity AS DECIMAL(12,2)) AS q,
+                   CAST(COUNT(*) AS BIGINT) AS n
+            FROM lineitem WHERE l_returnflag IN ('R', 'N')
+            GROUP BY g, q
+        ),
+        a AS (SELECT q AS qa, n AS na FROM cells WHERE g = 'R'),
+        b AS (SELECT q AS qb, n AS nb FROM cells WHERE g = 'N'),
+        pair AS (
+            SELECT CAST(SUM(CASE WHEN qa > qb THEN na * nb ELSE 0 END)
+                        AS BIGINT) AS n_gt,
+                   CAST(SUM(CASE WHEN qa < qb THEN na * nb ELSE 0 END)
+                        AS BIGINT) AS n_lt
+            FROM a CROSS JOIN b
+        ),
+        n1 AS (SELECT CAST(SUM(n) AS BIGINT) AS n1 FROM cells WHERE g = 'R'),
+        n2 AS (SELECT CAST(SUM(n) AS BIGINT) AS n2 FROM cells WHERE g = 'N')
+        SELECT n1, n2, n_gt, n_lt,
+               CAST(n_gt - n_lt AS DOUBLE)
+                 / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) AS cliffs_delta
+        FROM pair CROSS JOIN n1 CROSS JOIN n2
+    """,
+)
+def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cliff's delta — the ordinal (nonparametric) effect size between
+    the returned ('R') and not-returned ('N') quantity distributions:
+    delta = (#{x>y} - #{x<y}) / (n1*n2), the dominance probability
+    difference that Mann-Whitney tests but doesn't report. Distributed
+    shape: quantities collapse to value CELLS first (content-bounded:
+    |distinct l_quantity| <= 50 at any SF), so the pairwise term is a
+    cell-level nested-loop over <=50x50 counted pairs — never an
+    n1*n2 row join; the broadcast is of the bounded cell relation.
+    All counts are exact BIGINTs; delta is the single presentation
+    division."""
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_returnflag").isin("R", "N"))
+        .select(
+            F.col("l_returnflag").alias("g"),
+            F.col("l_quantity").cast("decimal(12,2)").alias("q"),
+        )
+    )
+    cells = (
+        li.groupBy("g", "q").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    ).persist()
+    a = cells.filter(F.col("g") == "R").select(
+        F.col("q").alias("qa"), F.col("n").alias("na")
+    )
+    b = cells.filter(F.col("g") == "N").select(
+        F.col("q").alias("qb"), F.col("n").alias("nb")
+    )
+    pair = a.crossJoin(F.broadcast(b)).agg(
+        F.sum(F.when(F.col("qa") > F.col("qb"), F.col("na") * F.col("nb")).otherwise(0))
+        .cast("bigint")
+        .alias("n_gt"),
+        F.sum(F.when(F.col("qa") < F.col("qb"), F.col("na") * F.col("nb")).otherwise(0))
+        .cast("bigint")
+        .alias("n_lt"),
+    )
+    n1 = cells.filter(F.col("g") == "R").agg(
+        F.sum("n").cast("bigint").alias("n1")
+    )
+    n2 = cells.filter(F.col("g") == "N").agg(
+        F.sum("n").cast("bigint").alias("n2")
+    )
+    return (
+        pair.crossJoin(F.broadcast(n1))
+        .crossJoin(F.broadcast(n2))
+        .select(
+            "n1",
+            "n2",
+            "n_gt",
+            "n_lt",
+            (
+                (F.col("n_gt") - F.col("n_lt")).cast("double")
+                / (F.col("n1").cast("double") * F.col("n2").cast("double"))
+            ).alias("cliffs_delta"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_dunn_posthoc — Dunn's pairwise z after Kruskal-Wallis
+
+
+@register(
+    "stat_dunn_posthoc",
+    tags=("stats", "window"),
+    oracle="""
+        WITH vals AS MATERIALIZED (
+            SELECT o_orderpriority AS g,
+                   CAST(o_totalprice AS DECIMAL(18,2)) AS q
+            FROM orders
+        ),
+        ranked AS (
+            SELECT g,
+                   2 * RANK() OVER (ORDER BY q)
+                     + COUNT(*) OVER (PARTITION BY q) - 1 AS u
+            FROM vals
+        ),
+        grp AS MATERIALIZED (
+            SELECT g, CAST(SUM(u) AS BIGINT) AS ru,
+                   CAST(COUNT(*) AS BIGINT) AS ni
+            FROM ranked GROUP BY g
+        ),
+        ties AS (
+            SELECT CAST(SUM(t * t * t - t) AS BIGINT) AS tt
+            FROM (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM vals GROUP BY q)
+        ),
+        tot AS (SELECT CAST(SUM(ni) AS BIGINT) AS n FROM grp)
+        SELECT gi.g AS g_a, gj.g AS g_b, gi.ni AS n_a, gj.ni AS n_b,
+               CAST(gi.ru AS DOUBLE)
+                 / (CAST(2 AS DOUBLE) * CAST(gi.ni AS DOUBLE)) AS mean_rank_a,
+               CAST(gj.ru AS DOUBLE)
+                 / (CAST(2 AS DOUBLE) * CAST(gj.ni AS DOUBLE)) AS mean_rank_b,
+               (CAST(gi.ru AS DOUBLE)
+                  / (CAST(2 AS DOUBLE) * CAST(gi.ni AS DOUBLE))
+                - CAST(gj.ru AS DOUBLE)
+                  / (CAST(2 AS DOUBLE) * CAST(gj.ni AS DOUBLE)))
+               / SQRT(
+                   (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + CAST(1 AS DOUBLE))
+                      / CAST(12 AS DOUBLE)
+                    - CAST(tt AS DOUBLE)
+                      / (CAST(12 AS DOUBLE)
+                         * (CAST(n AS DOUBLE) - CAST(1 AS DOUBLE))))
+                   * (CAST(1 AS DOUBLE) / CAST(gi.ni AS DOUBLE)
+                      + CAST(1 AS DOUBLE) / CAST(gj.ni AS DOUBLE))
+                 ) AS z
+        FROM grp gi JOIN grp gj ON gi.g < gj.g
+        CROSS JOIN ties CROSS JOIN tot
+    """,
+)
+def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dunn's post-hoc test — the tie-corrected pairwise z statistics
+    that follow a significant Kruskal-Wallis (which group pairs
+    actually differ): z_ij = (Rbar_i - Rbar_j) / sqrt((N(N+1)/12 -
+    sum(t^3-t)/(12(N-1))) * (1/n_i + 1/n_j)), over order totalprice by
+    priority. Exactness: doubled midranks u = 2*RANK + tiecount - 1
+    are exact BIGINTs (the house midrank recipe); group rank sums and
+    the tie term are exact integers; each mean rank is ONE division
+    and z is one shared expression parenthesized identically on both
+    engines (sqrt is IEEE-correctly-rounded, so identical operands
+    give identical bits). Distributed shape: pooled doubled midranks
+    via midranks2 (value-bucket window + O(buckets) broadcast carry,
+    exactly as stat_kruskal_wallis ranks this same column — never an
+    unpartitioned global row sort); a row's u = 2*RANK + tiecount - 1
+    equals the mr2 of its distinct value, so per-group rank sums come
+    from one value-keyed join + one group agg, then group-level
+    (5-row) state only — the pairwise stage is a 5x5 bounded
+    self-join, broadcast legitimately. Oracle unchanged from the
+    row-window form: identical integer group sums by construction."""
+    vals = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderpriority").alias("g"),
+        F.col("o_totalprice").cast("decimal(18,2)").alias("q"),
+    )
+    rv = midranks2(vals, "q", 10000)
+    grp = (
+        vals.join(rv, vals.q == rv.v)
+        .groupBy("g")
+        .agg(
+            F.sum("mr2").cast("bigint").alias("ru"),
+            F.count(F.lit(1)).cast("bigint").alias("ni"),
+        )
+        .persist()
+    )
+    ties = (
+        vals.groupBy("q")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
+        .agg(
+            F.sum(
+                F.col("t") * F.col("t") * F.col("t") - F.col("t")
+            )
+            .cast("bigint")
+            .alias("tt")
+        )
+    )
+    tot = grp.agg(F.sum("ni").cast("bigint").alias("n"))
+    gi = grp.select(
+        F.col("g").alias("g_a"), F.col("ru").alias("ru_a"), F.col("ni").alias("n_a")
+    )
+    gj = grp.select(
+        F.col("g").alias("g_b"), F.col("ru").alias("ru_b"), F.col("ni").alias("n_b")
+    )
+    two = F.lit(2).cast("double")
+    one = F.lit(1).cast("double")
+    twelve = F.lit(12).cast("double")
+    mean_a = F.col("ru_a").cast("double") / (two * F.col("n_a").cast("double"))
+    mean_b = F.col("ru_b").cast("double") / (two * F.col("n_b").cast("double"))
+    nd = F.col("n").cast("double")
+    a_term = nd * (nd + one) / twelve - F.col("tt").cast("double") / (
+        twelve * (nd - one)
+    )
+    z = (mean_a - mean_b) / F.sqrt(
+        a_term
+        * (
+            one / F.col("n_a").cast("double")
+            + one / F.col("n_b").cast("double")
+        )
+    )
+    return (
+        gi.join(F.broadcast(gj), F.col("g_a") < F.col("g_b"))
+        .crossJoin(F.broadcast(ties))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "g_a",
+            "g_b",
+            "n_a",
+            "n_b",
+            mean_a.alias("mean_rank_a"),
+            mean_b.alias("mean_rank_b"),
+            z.alias("z"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_cramers_v_corrected — Bergsma bias-corrected Cramér's V
+
+
+@register(
+    "stat_cramers_v_corrected",
+    tags=("stats", "agg"),
+    oracle=f"""
+        WITH cells AS (
+            SELECT l_returnflag AS r, l_linestatus AS c,
+                   CAST(COUNT(*) AS BIGINT) AS o
+            FROM lineitem GROUP BY 1, 2
+        ),
+        margins AS (
+            SELECT r, c, o,
+                   CAST(SUM(o) OVER (PARTITION BY r) AS BIGINT) AS nr,
+                   CAST(SUM(o) OVER (PARTITION BY c) AS BIGINT) AS nc,
+                   CAST(SUM(o) OVER () AS BIGINT) AS n
+            FROM cells
+        ),
+        tots AS (
+            SELECT MAX(n) AS n,
+                   COUNT(DISTINCT r) AS nrows, COUNT(DISTINCT c) AS ncols,
+                   {o_fsum(PHI2_CELL_SQL, 15)} AS phi2
+            FROM margins
+        )
+        SELECT CAST(n AS BIGINT) AS n,
+               CAST(nrows AS BIGINT) AS n_rows,
+               CAST(ncols AS BIGINT) AS n_cols,
+               phi2,
+               GREATEST(CAST(0 AS DOUBLE),
+                        phi2 - CAST((nrows - 1) * (ncols - 1) AS DOUBLE)
+                               / CAST(n - 1 AS DOUBLE)) AS phi2_corr,
+               CASE WHEN LEAST(
+                      CAST(nrows AS DOUBLE)
+                        - CAST((nrows - 1) * (nrows - 1) AS DOUBLE)
+                          / CAST(n - 1 AS DOUBLE) - CAST(1 AS DOUBLE),
+                      CAST(ncols AS DOUBLE)
+                        - CAST((ncols - 1) * (ncols - 1) AS DOUBLE)
+                          / CAST(n - 1 AS DOUBLE) - CAST(1 AS DOUBLE))
+                    > CAST(0 AS DOUBLE) THEN
+                 sqrt(GREATEST(CAST(0 AS DOUBLE),
+                        phi2 - CAST((nrows - 1) * (ncols - 1) AS DOUBLE)
+                               / CAST(n - 1 AS DOUBLE))
+                      / LEAST(
+                      CAST(nrows AS DOUBLE)
+                        - CAST((nrows - 1) * (nrows - 1) AS DOUBLE)
+                          / CAST(n - 1 AS DOUBLE) - CAST(1 AS DOUBLE),
+                      CAST(ncols AS DOUBLE)
+                        - CAST((ncols - 1) * (ncols - 1) AS DOUBLE)
+                          / CAST(n - 1 AS DOUBLE) - CAST(1 AS DOUBLE)))
+               END AS cramers_v_corrected
+        FROM tots
+    """,
+)
+def stat_cramers_v_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bias-corrected Cramér's V (Bergsma 2013) between return flag and
+    line status: the uncorrected V systematically overstates
+    association in finite samples, so phi2 is shrunk by its null
+    expectation (r-1)(c-1)/(n-1) and the row/column counts are shrunk
+    the same way before the min — the version a profiler should
+    actually report. phi2 rides the stat_cramers_v o_fsum recipe
+    (per-cell contribution floor-scaled at 1e-15, DECIMAL(38,0) sum —
+    order-independent); every correction term is integer arithmetic
+    pushed to one shared double expression, NULL-guarded on the
+    degenerate 1xC/Rx1 shrink with the IDENTICAL predicate.
+    Corpus-scale work: one grouped count."""
+    li = load_table(spark, sf_dir, "lineitem")
+    cells = li.groupBy(
+        F.col("l_returnflag").alias("r"), F.col("l_linestatus").alias("c")
+    ).agg(F.count(F.lit(1)).alias("o"))
+    wr = Window.partitionBy("r")
+    wc = Window.partitionBy("c")
+    wall = Window.partitionBy()
+    m = cells.select(
+        "r",
+        "c",
+        "o",
+        F.sum("o").over(wr).cast("bigint").alias("nr"),
+        F.sum("o").over(wc).cast("bigint").alias("nc"),
+        F.sum("o").over(wall).cast("bigint").alias("n"),
+    )
+    tots = m.agg(
+        F.max("n").alias("n"),
+        F.countDistinct("r").alias("nrows"),
+        F.countDistinct("c").alias("ncols"),
+        (
+            as_d(
+                F.sum(F.floor(phi2_cell() * F.lit(1e15)).cast("decimal(38,0)"))
+            )
+            / F.lit(1e15)
+        ).alias("phi2"),
+    )
+    zero = F.lit(0).cast("double")
+    one = F.lit(1).cast("double")
+    nd = (F.col("n") - 1).cast("double")
+    phi2_corr = F.greatest(
+        zero,
+        F.col("phi2")
+        - ((F.col("nrows") - 1) * (F.col("ncols") - 1)).cast("double") / nd,
+    )
+    r_corr = (
+        F.col("nrows").cast("double")
+        - ((F.col("nrows") - 1) * (F.col("nrows") - 1)).cast("double") / nd
+        - one
+    )
+    c_corr = (
+        F.col("ncols").cast("double")
+        - ((F.col("ncols") - 1) * (F.col("ncols") - 1)).cast("double") / nd
+        - one
+    )
+    denom = F.least(r_corr, c_corr)
+    return tots.select(
+        F.col("n").cast("bigint").alias("n"),
+        F.col("nrows").cast("bigint").alias("n_rows"),
+        F.col("ncols").cast("bigint").alias("n_cols"),
+        "phi2",
+        phi2_corr.alias("phi2_corr"),
+        F.when(denom > zero, F.sqrt(phi2_corr / denom)).alias(
+            "cramers_v_corrected"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_hypergeom_surprise — per-cell hypergeometric log point-probability
+
+
+@register(
+    "stat_hypergeom_surprise",
+    tags=("stats", "text", "agg"),
+    oracle="""
+        WITH cells AS MATERIALIZED (
+            SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS nij
+            FROM documents GROUP BY lang, source
+        ),
+        ai AS MATERIALIZED (SELECT lang, CAST(SUM(nij) AS BIGINT) AS ai
+              FROM cells GROUP BY lang),
+        bj AS MATERIALIZED (SELECT source, CAST(SUM(nij) AS BIGINT) AS bj
+              FROM cells GROUP BY source),
+        tot AS (SELECT CAST(SUM(nij) AS BIGINT) AS n FROM cells),
+        spine AS MATERIALIZED (
+            SELECT CAST(0 AS BIGINT) AS k, CAST(0.0 AS DECIMAL(12,6)) AS lnk
+            UNION ALL
+            SELECT CAST(ROW_NUMBER() OVER (ORDER BY doc_id) AS BIGINT) AS k,
+                   CAST(ln(CAST(ROW_NUMBER() OVER (ORDER BY doc_id)
+                                AS DOUBLE)) AS DECIMAL(12,6)) AS lnk
+            FROM documents
+        ),
+        lf AS MATERIALIZED (
+            SELECT k, CAST(SUM(lnk) OVER (ORDER BY k
+                     ROWS UNBOUNDED PRECEDING) AS DECIMAL(38,6)) AS lf
+            FROM spine
+        ),
+        joined AS (
+            SELECT c.lang, c.source, c.nij, a.ai, b.bj, t.n,
+                   (SELECT lf FROM lf WHERE k = a.ai)
+                 - (SELECT lf FROM lf WHERE k = c.nij)
+                 - (SELECT lf FROM lf WHERE k = a.ai - c.nij)
+                 + (SELECT lf FROM lf WHERE k = t.n - a.ai)
+                 - (SELECT lf FROM lf WHERE k = b.bj - c.nij)
+                 - (SELECT lf FROM lf WHERE k = t.n - a.ai - b.bj + c.nij)
+                 - (SELECT lf FROM lf WHERE k = t.n)
+                 + (SELECT lf FROM lf WHERE k = b.bj)
+                 + (SELECT lf FROM lf WHERE k = t.n - b.bj) AS lnp_dec
+            FROM cells c
+            JOIN ai a ON a.lang = c.lang
+            JOIN bj b ON b.source = c.source
+            CROSS JOIN tot t
+        )
+        SELECT lang, source, nij, ai, bj, n,
+               CAST(CAST(lnp_dec AS VARCHAR) AS DOUBLE) AS log_p
+        FROM joined
+    """,
+)
+def stat_hypergeom_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hypergeometric surprise per (lang, source) cell: the log point-
+    probability ln P(X = nij) of observing the cell count under the
+    independence null, X ~ Hypergeom(N, a_i, b_j) — the enrichment
+    score term-overlap / gene-set-style analyses rank by (a very
+    negative log_p = the cell is far from what marginals alone
+    predict). Exactness: ln-factorials come from a 0..N spine
+    (row_number over documents — identical on both engines) whose
+    per-k ln quantizes to DECIMAL(12,6) and accumulates by an exact
+    decimal cumulative window, so every lnC(n,k) = lf(n)-lf(k)-lf(n-k)
+    and the 9-term combination are EXACT DECIMAL arithmetic; the one
+    double appears at the presentation cast. Distributed shape: the
+    contingency and margins are bounded; the spine is O(N) with a
+    prefix-sum window — at cluster scale that window becomes the
+    standard bucket+carry two-pass prefix sum (the house
+    stat_ks_two_sample pattern); the 9 lf lookups are equi-joins of
+    the bounded cell relation against the spine."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    cells = d.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nij")
+    ).persist()
+    ai = cells.groupBy("lang").agg(F.sum("nij").cast("bigint").alias("ai"))
+    bj = cells.groupBy("source").agg(F.sum("nij").cast("bigint").alias("bj"))
+    tot = cells.agg(F.sum("nij").cast("bigint").alias("n"))
+    spine = d.select(
+        F.row_number().over(Window.orderBy("doc_id")).cast("bigint").alias("k")
+    ).select(
+        "k", F.log(F.col("k").cast("double")).cast("decimal(12,6)").alias("lnk")
+    ).unionByName(
+        d.sparkSession.range(1).select(
+            F.lit(0).cast("bigint").alias("k"),
+            F.lit("0.0").cast("decimal(12,6)").alias("lnk"),
+        )
+    )
+    lf = spine.select(
+        "k",
+        F.sum("lnk")
+        .over(Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0))
+        .cast("decimal(38,6)")
+        .alias("lf"),
+    ).persist()  # one O(N) prefix sum, computed once for the 9 lookups
+    base = (
+        cells.join(F.broadcast(ai), "lang")
+        .join(F.broadcast(bj), "source")
+        .crossJoin(F.broadcast(tot))
+    )
+
+    # nine lf lookups: each is an equi-join of the bounded cell
+    # relation against the spine
+    joined = base
+    specs = [
+        ("lf_ai", F.col("ai")),
+        ("lf_nij", F.col("nij")),
+        ("lf_ai_nij", F.col("ai") - F.col("nij")),
+        ("lf_nai", F.col("n") - F.col("ai")),
+        ("lf_bj_nij", F.col("bj") - F.col("nij")),
+        ("lf_rest", F.col("n") - F.col("ai") - F.col("bj") + F.col("nij")),
+        ("lf_n", F.col("n")),
+        ("lf_bj", F.col("bj")),
+        ("lf_nbj", F.col("n") - F.col("bj")),
+    ]
+    for name, expr in specs:
+        lfx = lf.select(F.col("k").alias(f"k_{name}"), F.col("lf").alias(name))
+        joined = joined.join(lfx, expr == F.col(f"k_{name}")).drop(f"k_{name}")
+    lnp_dec = (
+        F.col("lf_ai")
+        - F.col("lf_nij")
+        - F.col("lf_ai_nij")
+        + F.col("lf_nai")
+        - F.col("lf_bj_nij")
+        - F.col("lf_rest")
+        - F.col("lf_n")
+        + F.col("lf_bj")
+        + F.col("lf_nbj")
+    )
+    return joined.select(
+        "lang",
+        "source",
+        "nij",
+        "ai",
+        "bj",
+        "n",
+        as_d(lnp_dec).alias("log_p"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_cvm_uniform / stat_ad_uniform — one-sample EDF integrals of the
+# md5 ladder vs U(0,1), completing the KS/Kuiper family
+
+_UNIF_POS_SQL = """
+        uni AS (
+            SELECT o_orderkey AS key,
+                   CAST('0x' || SUBSTRING(
+                       md5(CAST(o_orderkey AS VARCHAR)), 1, 6) AS BIGINT) AS k
+            FROM orders
+        ),
+        pos AS (
+            SELECT k,
+                   CAST(ROW_NUMBER() OVER (ORDER BY k, key) AS BIGINT) AS i,
+                   CAST(COUNT(*) OVER () AS BIGINT) AS n
+            FROM uni
+        )
+"""
+
+
+def _md5_uniform_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(k, i, n): md5-uniformized order keys with their global EDF rank
+    — the _unif_edf machinery re-exposed at row granularity:
+    u_i = k_i/2^24 exact rational; the rank avoids a global sort via
+    256 top-byte buckets + a bounded bucket-offset carry; identical i
+    to the oracle's plain ROW_NUMBER because both order by (k, key)."""
+    o = load_table(spark, sf_dir, "orders")
+    uni = o.select(
+        F.col("o_orderkey").alias("key"),
+        F.conv(
+            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 6), 16, 10
+        )
+        .cast("bigint")
+        .alias("k"),
+    )
+    bucketed = uni.select("key", "k", F.shiftright("k", 16).alias("bkt"))
+    sizes = bucketed.groupBy("bkt").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    woff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    offs = sizes.select(
+        "bkt",
+        F.coalesce(F.sum("cnt").over(woff), F.lit(0))
+        .cast("bigint")
+        .alias("off"),
+    )
+    tot = sizes.agg(F.sum("cnt").cast("bigint").alias("n"))
+    wrn = Window.partitionBy("bkt").orderBy("k", "key")
+    return (
+        bucketed.join(F.broadcast(offs), "bkt")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "k",
+            "n",
+            (F.col("off") + F.row_number().over(wrn)).cast("bigint").alias("i"),
+        )
+    )
+
+
+@register(
+    "stat_cvm_uniform",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH {_UNIF_POS_SQL},
+        sums AS (
+            SELECT MAX(n) AS n,
+                   CAST(SUM(CAST(k * k AS DECIMAL(38,0))) AS DECIMAL(38,0))
+                       AS a_sum,
+                   CAST(SUM(CAST((2 * i - 1) * k AS DECIMAL(38,0)))
+                        AS DECIMAL(38,0)) AS b_sum,
+                   CAST(SUM(CAST((2 * i - 1) * (2 * i - 1) AS DECIMAL(38,0)))
+                        AS DECIMAL(38,0)) AS c_sum
+            FROM pos
+        )
+        SELECT CAST(n AS BIGINT) AS n,
+               ((CAST(CAST(a_sum AS VARCHAR) AS DOUBLE)
+                   / (CAST(16777216 AS DOUBLE) * CAST(16777216 AS DOUBLE))
+                 - CAST(CAST(b_sum AS VARCHAR) AS DOUBLE)
+                   / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)))
+                + CAST(CAST(c_sum AS VARCHAR) AS DOUBLE)
+                  / (CAST(4 AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
+               + CAST(1 AS DOUBLE) / (CAST(12 AS DOUBLE) * CAST(n AS DOUBLE))
+                   AS w2_stat
+        FROM sums
+    """,
+)
+def stat_cvm_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-sample Cramér-von Mises test of the engine's md5 key ladder
+    against U(0,1) — the INTEGRAL-deviation companion to the round-12
+    stat_ks_uniform/stat_kuiper_uniform SUP-deviation pair (the third
+    member of the EDF family; CvM weighs the whole CDF, not just the
+    worst point): W² = 1/(12n) + sum_i (u_(i) - (2i-1)/(2n))² with
+    u = k/2^24 exact rational. The square expands to THREE exact
+    DECIMAL(38,0) sums — A = sum k², B = sum (2i-1)k, C = sum (2i-1)²
+    — so W² = A/2^48 - B/(n·2^24) + C/(4n²) + 1/(12n) is a fixed-order
+    4-term double expression parenthesized identically on both
+    engines; no per-row float exists anywhere. Same bucket+carry rank
+    as the KS twin (no global sort). Row products fit BIGINT and the
+    sums fit DECIMAL(38,0) to ~sf1e5."""
+    pos = _md5_uniform_pos(spark, sf_dir)
+    sums = pos.agg(
+        F.max("n").alias("n"),
+        F.sum((F.col("k") * F.col("k")).cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("a_sum"),
+        F.sum(((F.lit(2) * F.col("i") - 1) * F.col("k")).cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("b_sum"),
+        F.sum(
+            (
+                (F.lit(2) * F.col("i") - 1) * (F.lit(2) * F.col("i") - 1)
+            ).cast("decimal(38,0)")
+        )
+        .cast("decimal(38,0)")
+        .alias("c_sum"),
+    )
+    m = F.lit(16777216).cast("double")
+    nd = F.col("n").cast("double")
+    w2 = (
+        (
+            as_d(F.col("a_sum")) / (m * m)
+            - as_d(F.col("b_sum")) / (nd * m)
+        )
+        + as_d(F.col("c_sum")) / (F.lit(4).cast("double") * nd * nd)
+    ) + F.lit(1).cast("double") / (F.lit(12).cast("double") * nd)
+    return sums.select(F.col("n").cast("bigint").alias("n"), w2.alias("w2_stat"))
+
+
+@register(
+    "stat_ad_uniform",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH {_UNIF_POS_SQL},
+        terms AS (
+            SELECT MAX(n) AS n,
+                   CAST(SUM(
+                     (2 * i - 1)
+                     * CAST(ln(CAST(2 * k + 1 AS DOUBLE)
+                               / CAST(33554432 AS DOUBLE))
+                            AS DECIMAL(12,6))
+                     + (2 * (n - i) + 1)
+                     * CAST(ln(CAST(33554432 - (2 * k + 1) AS DOUBLE)
+                               / CAST(33554432 AS DOUBLE))
+                            AS DECIMAL(12,6))
+                   ) AS DECIMAL(38,6)) AS s
+            FROM pos
+        )
+        SELECT CAST(n AS BIGINT) AS n,
+               -CAST(n AS DOUBLE)
+                 - CAST(CAST(s AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
+                   AS a2_stat
+        FROM terms
+    """,
+)
+def stat_ad_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-sample Anderson-Darling test of the md5 ladder vs U(0,1) —
+    the TAIL-WEIGHTED member of the EDF family (KS = sup, Kuiper =
+    cyclic sup, CvM = integral, AD = integral weighted by
+    1/(F(1-F))): A² = -n - (1/n) sum_i [(2i-1) ln u_(i) +
+    (2(n-i)+1) ln(1-u_(i))]. Draws use the MIDPOINT convention
+    u = (2k+1)/2^25 so u is strictly inside (0,1) and both logs are
+    finite (k = 0 or 2^24-1 would otherwise hit ln 0) — documented
+    deviation from the KS/CvM twins' k/2^24. Each ln quantizes to
+    DECIMAL(12,6) (the house quantized-ln recipe; libm 1-ulp spread
+    cannot straddle a 1e-6 boundary at any realistic rate), the
+    integer-weighted terms sum as exact decimals, and A² is one
+    presentation expression. Quantization accuracy note: the
+    1e-6-rounded logs enter with weights summing to 2n², so the
+    statistic drifts from the infinite-precision value by
+    ~sqrt(n)·3e-7 typical (≈2e-4 at sf0.1) — identical on both
+    engines, immaterial against AD critical values (~1-4). Same
+    bucket+carry rank as the KS/CvM twins."""
+    pos = _md5_uniform_pos(spark, sf_dir)
+    m25 = F.lit(33554432).cast("double")
+    ln_u = F.log(
+        (F.lit(2) * F.col("k") + 1).cast("double") / m25
+    ).cast("decimal(12,6)")
+    ln_1u = F.log(
+        (F.lit(33554432) - (F.lit(2) * F.col("k") + 1)).cast("double") / m25
+    ).cast("decimal(12,6)")
+    term = (F.lit(2) * F.col("i") - 1) * ln_u + (
+        F.lit(2) * (F.col("n") - F.col("i")) + 1
+    ) * ln_1u
+    sums = pos.agg(
+        F.max("n").alias("n"),
+        F.sum(term).cast("decimal(38,6)").alias("s"),
+    )
+    a2 = -F.col("n").cast("double") - as_d(F.col("s")) / F.col("n").cast(
+        "double"
+    )
+    return sums.select(F.col("n").cast("bigint").alias("n"), a2.alias("a2_stat"))
+
+
+# ---------------------------------------------------------------------------
+# stat_moods_median — Mood's median test across order priorities
+
+
+@register(
+    "stat_moods_median",
+    tags=("stats", "window"),
+    oracle=f"""
+        WITH lab AS MATERIALIZED (
+            SELECT o_orderpriority AS g,
+                   CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+                        AS BIGINT) AS xc
+            FROM orders
+        ),
+        per_val AS (
+            SELECT xc, CAST(COUNT(*) AS BIGINT) AS c,
+                   xc // 1000000 AS bkt
+            FROM lab GROUP BY xc
+        ),
+        within AS (
+            SELECT bkt, xc, c,
+                   CAST(SUM(c) OVER (PARTITION BY bkt ORDER BY xc
+                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS wc
+            FROM per_val
+        ),
+        carry AS (
+            SELECT bkt,
+                   CAST(COALESCE(SUM(tb) OVER (ORDER BY bkt
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                        0) AS BIGINT) AS cb
+            FROM (SELECT bkt, SUM(c) AS tb FROM per_val GROUP BY bkt)
+        ),
+        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per_val),
+        med AS (
+            SELECT CAST(MIN(CASE WHEN w.wc + ca.cb >= (t.n + 1) // 2
+                                 THEN w.xc END) AS BIGINT) AS med
+            FROM within w JOIN carry ca ON ca.bkt = w.bkt CROSS JOIN tot t
+        ),
+        per AS (
+            SELECT g, CAST(COUNT(*) AS BIGINT) AS ng,
+                   CAST(SUM(CASE WHEN l.xc > m.med THEN 1 ELSE 0 END)
+                        AS BIGINT) AS ag
+            FROM lab l CROSS JOIN med m
+            GROUP BY g
+        ),
+        pool AS (
+            SELECT CAST(SUM(ng) AS BIGINT) AS n,
+                   CAST(SUM(ag) AS BIGINT) AS a
+            FROM per
+        ),
+        terms AS (
+            SELECT g, ng, ag,
+                   CAST(ng * a AS DOUBLE) / CAST(n AS DOUBLE) AS eg,
+                   (CAST(ag AS DOUBLE)
+                      - CAST(ng * a AS DOUBLE) / CAST(n AS DOUBLE))
+                   * (CAST(ag AS DOUBLE)
+                      - CAST(ng * a AS DOUBLE) / CAST(n AS DOUBLE))
+                   / (CAST(ng * a AS DOUBLE) / CAST(n AS DOUBLE))
+                   + (CAST(ng - ag AS DOUBLE)
+                      - (CAST(ng AS DOUBLE)
+                         - CAST(ng * a AS DOUBLE) / CAST(n AS DOUBLE)))
+                   * (CAST(ng - ag AS DOUBLE)
+                      - (CAST(ng AS DOUBLE)
+                         - CAST(ng * a AS DOUBLE) / CAST(n AS DOUBLE)))
+                   / (CAST(ng AS DOUBLE)
+                      - CAST(ng * a AS DOUBLE) / CAST(n AS DOUBLE)) AS t
+            FROM per CROSS JOIN pool
+        ),
+        chi AS (
+            SELECT {o_ordered_fold_sum('g', 't')} AS chi2
+            FROM terms
+        )
+        SELECT tm.g, tm.ng AS n_g, tm.ag AS n_above, tm.eg AS exp_above,
+               c.chi2
+        FROM terms tm CROSS JOIN chi c
+    """,
+)
+def stat_moods_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mood's median test — do the order-priority cohorts share one
+    median order value? Counts above/below the POOLED median form a
+    k x 2 table; chi-square against the independence expectation.
+    Exactness: the pooled median is a pinned order statistic over
+    exact integer cents (per-distinct-value counts, value-bucket
+    cumulative window + O(buckets) carry — the midranks2
+    decomposition, never a global row sort; threshold (n+1) DIV 2
+    twins DuckDB `//`); the k x 2 table is exact BIGINTs; each
+    group's chi-square term is one double expression parenthesized
+    identically on both engines and the k-term fold runs in sorted
+    group order (the ANOVA recipe). Distributed shape: one
+    distinct-value agg + one broadcast-median count pass — two
+    map-side-combining corpus scans, group state k-bounded.
+    Deliberately UNPERSISTED: the projection is a cheap scan and the
+    distinct-value agg a cheap shuffle, so recomputation per consumer
+    beats paying the cache write (measured min-of-3 at sf0.1:
+    no-persist 2.01 s vs both-persisted 5.00 s — the opposite
+    trade-off from ml_bagging_oob's expensive md5 base, where the
+    barrier is load-bearing)."""
+    o = load_table(spark, sf_dir, "orders")
+    lab = o.select(
+        F.col("o_orderpriority").alias("g"),
+        (F.col("o_totalprice").cast("decimal(12,2)") * F.lit(100))
+        .cast("bigint")
+        .alias("xc"),
+    )
+    per_val = (
+        lab.groupBy("xc")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .withColumn("bkt", F.expr("xc DIV 1000000"))
+    )
+    w_in = (
+        Window.partitionBy("bkt")
+        .orderBy("xc")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    within = per_val.select(
+        "bkt", "xc", F.col("c"), F.sum("c").over(w_in).alias("wc")
+    )
+    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    carry = (
+        per_val.groupBy("bkt")
+        .agg(F.sum("c").alias("tb"))
+        .select(
+            "bkt",
+            F.coalesce(F.sum("tb").over(w_carry), F.lit(0)).alias("cb"),
+        )
+    )
+    tot = per_val.agg(F.sum("c").cast("bigint").alias("n"))
+    med = (
+        within.join(F.broadcast(carry), "bkt")
+        .crossJoin(F.broadcast(tot))
+        .agg(
+            F.min(
+                F.when(
+                    F.col("wc") + F.col("cb")
+                    >= F.expr("(n + 1) DIV 2"),
+                    F.col("xc"),
+                )
+            )
+            .cast("bigint")
+            .alias("med")
+        )
+    )
+    per = (
+        lab.crossJoin(F.broadcast(med))
+        .groupBy("g")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("ng"),
+            F.sum((F.col("xc") > F.col("med")).cast("int"))
+            .cast("bigint")
+            .alias("ag"),
+        )
+    )
+    pool = per.agg(
+        F.sum("ng").cast("bigint").alias("n"),
+        F.sum("ag").cast("bigint").alias("a"),
+    )
+    eg = (F.col("ng") * F.col("a")).cast("double") / F.col("n").cast("double")
+    ad = F.col("ag").cast("double")
+    bd = (F.col("ng") - F.col("ag")).cast("double")
+    ebg = F.col("ng").cast("double") - eg
+    term = (ad - eg) * (ad - eg) / eg + (bd - ebg) * (bd - ebg) / ebg
+    terms = per.crossJoin(F.broadcast(pool)).select(
+        "g", "ng", "ag", eg.alias("eg"), term.alias("t")
+    )
+    chi = terms.agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("g"), F.col("t")))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["t"],
+        ).alias("chi2")
+    )
+    return terms.crossJoin(F.broadcast(chi)).select(
+        "g",
+        F.col("ng").alias("n_g"),
+        F.col("ag").alias("n_above"),
+        F.col("eg").alias("exp_above"),
+        "chi2",
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_bartels_rank_vn — Bartels' rank von Neumann randomness test
+
+
+@register(
+    "stat_bartels_rank_vn",
+    tags=("stats", "timeseries", "window"),
+    oracle=f"""
+        WITH daily AS ({DAILY_Q6_SQL}),
+        ranked AS (
+            SELECT event_type, d,
+                   2 * RANK() OVER (PARTITION BY event_type ORDER BY v)
+                     + COUNT(*) OVER (PARTITION BY event_type, v) - 1 AS r2
+            FROM daily
+        ),
+        seq AS (
+            SELECT event_type, r2,
+                   LEAD(r2) OVER (PARTITION BY event_type ORDER BY d)
+                       AS r2n,
+                   COUNT(*) OVER (PARTITION BY event_type) AS nt
+            FROM ranked
+        ),
+        per AS (
+            SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(CASE WHEN r2n IS NOT NULL
+                        THEN (r2 - r2n) * (r2 - r2n) ELSE 0 END)
+                        AS BIGINT) AS num4,
+                   CAST(SUM((r2 - (nt + 1)) * (r2 - (nt + 1)))
+                        AS BIGINT) AS den4
+            FROM seq
+            GROUP BY event_type
+        )
+        SELECT event_type, n, num4, den4,
+               CAST(num4 AS DOUBLE) / CAST(den4 AS DOUBLE) AS rvn,
+               (CAST(num4 AS DOUBLE) / CAST(den4 AS DOUBLE)
+                  - CAST(2 AS DOUBLE))
+               / sqrt(CAST(4 * (n - 2) * (5 * n * n - 2 * n - 9)
+                           AS DOUBLE)
+                      / CAST(5 * n * (n + 1) * (n - 1) * (n - 1)
+                             AS DOUBLE)) AS z
+        FROM per
+    """,
+)
+def stat_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bartels' rank von Neumann ratio per event type — the
+    nonparametric serial-randomness test: RVN = sum (r_i - r_{i+1})^2
+    / sum (r_i - rbar)^2 over the time-ordered ranks of the daily
+    totals; ~2 under randomness, <2 under positive autocorrelation.
+    Exactness: DOUBLED midranks (2*RANK + tiecount - 1) keep ties in
+    integer arithmetic; sum of doubled midranks is n(n+1) exactly, so
+    rbar2 = n + 1 is an exact integer and BOTH the successive-
+    difference and deviation sums are exact BIGINTs whose x4 scale
+    factors cancel in the ratio; RVN and its large-sample z are each
+    one double expression over integers. Distributed shape: windows
+    partition per event type over CALENDAR-bounded daily rows (the
+    Hampel/Friedman contract — days grow with time, not SF; the
+    corpus-scaled work is the one daily pre-agg in daily_q6)."""
+    daily = daily_q6(spark, sf_dir)
+    r2 = (
+        F.lit(2)
+        * F.rank().over(Window.partitionBy("event_type").orderBy("v"))
+        + F.count(F.lit(1)).over(Window.partitionBy("event_type", "v"))
+        - F.lit(1)
+    )
+    ranked = daily.select("event_type", "d", r2.alias("r2"))
+    w_t = Window.partitionBy("event_type").orderBy("d")
+    w_all = Window.partitionBy("event_type")
+    seq = ranked.select(
+        "event_type",
+        "r2",
+        F.lead("r2").over(w_t).alias("r2n"),
+        F.count(F.lit(1)).over(w_all).alias("nt"),
+    )
+    per = seq.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(
+            F.when(
+                F.col("r2n").isNotNull(),
+                (F.col("r2") - F.col("r2n")) * (F.col("r2") - F.col("r2n")),
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("num4"),
+        F.sum(
+            (F.col("r2") - (F.col("nt") + 1))
+            * (F.col("r2") - (F.col("nt") + 1))
+        )
+        .cast("bigint")
+        .alias("den4"),
+    )
+    nd = F.col("n")
+    rvn = F.col("num4").cast("double") / F.col("den4").cast("double")
+    z = (rvn - F.lit(2).cast("double")) / F.sqrt(
+        (4 * (nd - 2) * (5 * nd * nd - 2 * nd - 9)).cast("double")
+        / (5 * nd * (nd + 1) * (nd - 1) * (nd - 1)).cast("double")
+    )
+    return per.select(
+        "event_type", "n", "num4", "den4", rvn.alias("rvn"), z.alias("z")
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_theil_index — Theil T and L inequality indices
+
+
+@register(
+    "stat_theil_index",
+    tags=("stats", "agg"),
+    oracle="""
+        WITH base AS (
+            SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+                        AS BIGINT) AS xc
+            FROM orders WHERE o_totalprice > 0
+        ),
+        sums AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(xc) AS BIGINT) AS sxc,
+                   CAST(SUM(CAST(xc AS DECIMAL(19,0))
+                            * CAST(ln(CAST(xc AS DOUBLE)
+                                      / CAST(100 AS DOUBLE))
+                                   AS DECIMAL(12,6)))
+                        AS DECIMAL(38,6)) AS sxlnx,
+                   CAST(SUM(CAST(ln(CAST(xc AS DOUBLE)
+                                    / CAST(100 AS DOUBLE))
+                                 AS DECIMAL(12,6)))
+                        AS DECIMAL(38,6)) AS slnx
+            FROM base
+        )
+        SELECT n,
+               CAST(sxc AS DOUBLE) / CAST(100 AS DOUBLE)
+                   / CAST(n AS DOUBLE) AS mean_value,
+               CAST(CAST(sxlnx AS VARCHAR) AS DOUBLE)
+                   / CAST(sxc AS DOUBLE)
+                 - CAST(ln(CAST(sxc AS DOUBLE) / CAST(100 AS DOUBLE)
+                           / CAST(n AS DOUBLE)) AS DECIMAL(12,6))
+                   AS theil_t,
+               CAST(ln(CAST(sxc AS DOUBLE) / CAST(100 AS DOUBLE)
+                       / CAST(n AS DOUBLE)) AS DECIMAL(12,6))
+                 - CAST(CAST(slnx AS VARCHAR) AS DOUBLE)
+                   / CAST(n AS DOUBLE) AS theil_l
+        FROM sums
+    """,
+)
+def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil T and Theil L (mean log deviation) inequality indices of
+    order values — the decomposable entropy-family inequality
+    measures beside stat_gini_coefficient (T weights by value share,
+    L by population share; both 0 iff perfectly equal). Exactness:
+    T = sum(x ln x)/S - ln(S/n) and L = ln(S/n) - sum(ln x)/n, with
+    each per-row ln on an exact integer-cents ratio quantized to
+    DECIMAL(12,6) (the house quantized-ln recipe) so BOTH log sums
+    are exact decimal accumulations — order- and partition-free; the
+    single ln(mean) term quantizes identically on both engines; the
+    assembly is one shared expression. Distributed shape: ONE
+    map-side-combining scan, 1-row state — runs at any SF for the
+    cost of a count."""
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
+    base = o.select(
+        (F.col("o_totalprice").cast("decimal(12,2)") * F.lit(100))
+        .cast("bigint")
+        .alias("xc")
+    )
+    lnx = F.log(F.col("xc").cast("double") / F.lit(100).cast("double")).cast(
+        "decimal(12,6)"
+    )
+    sums = base.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("xc").cast("bigint").alias("sxc"),
+        F.sum(F.col("xc").cast("decimal(19,0)") * lnx)
+        .cast("decimal(38,6)")
+        .alias("sxlnx"),
+        F.sum(lnx).cast("decimal(38,6)").alias("slnx"),
+    )
+    mean_d = (
+        F.col("sxc").cast("double")
+        / F.lit(100).cast("double")
+        / F.col("n").cast("double")
+    )
+    ln_mean = F.log(mean_d).cast("decimal(12,6)")
+    return sums.select(
+        "n",
+        mean_d.alias("mean_value"),
+        (
+            as_d(F.col("sxlnx")) / F.col("sxc").cast("double") - ln_mean
+        ).alias("theil_t"),
+        (
+            ln_mean - as_d(F.col("slnx")) / F.col("n").cast("double")
+        ).alias("theil_l"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_lepage — combined location-scale two-sample test
+
+
+@register(
+    "stat_lepage",
+    tags=("stats", "window", "agg"),
+    oracle="""
+        WITH base AS (
+            SELECT CAST(l_quantity AS DECIMAL(12,2)) AS v,
+                   CAST(l_returnflag = 'R' AS INT) AS is_x
+            FROM lineitem WHERE l_returnflag IN ('R', 'N')
+        ),
+        cells AS (
+            SELECT v, CAST(COUNT(*) AS BIGINT) AS ct,
+                   CAST(SUM(is_x) AS BIGINT) AS cx
+            FROM base GROUP BY v
+        ),
+        ranked AS (
+            SELECT v, ct, cx,
+                   2 * (SUM(ct) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+                        - ct) + ct + 1 AS mr2,
+                   CAST(SUM(ct) OVER () AS BIGINT) AS n,
+                   CAST(SUM(cx) OVER () AS BIGINT) AS m
+            FROM cells
+        ),
+        scored AS (
+            SELECT ct, cx, n, m, mr2,
+                   LEAST(mr2, 2 * (n + 1) - mr2) AS ab2
+            FROM ranked
+        ),
+        moments AS (
+            SELECT MAX(n) AS n, MAX(m) AS m,
+                   CAST(SUM(cx * mr2) AS BIGINT) AS sw,
+                   CAST(SUM(ct * mr2) AS BIGINT) AS t1w,
+                   SUM(CAST(ct AS DECIMAL(38,0)) * mr2 * mr2) AS t2w,
+                   CAST(SUM(cx * ab2) AS BIGINT) AS sa,
+                   CAST(SUM(ct * ab2) AS BIGINT) AS t1a,
+                   SUM(CAST(ct AS DECIMAL(38,0)) * ab2 * ab2) AS t2a
+            FROM scored
+        ),
+        z AS (
+            SELECT n, m,
+                   (CAST(sw AS DOUBLE)
+                      - CAST(m AS DOUBLE) * CAST(t1w AS DOUBLE)
+                        / CAST(n AS DOUBLE))
+                   / sqrt(CAST(m AS DOUBLE) * CAST(n - m AS DOUBLE)
+                          * (CAST(n AS DOUBLE)
+                               * CAST(CAST(t2w AS VARCHAR) AS DOUBLE)
+                             - CAST(t1w AS DOUBLE) * CAST(t1w AS DOUBLE))
+                          / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
+                             * CAST(n - 1 AS DOUBLE))) AS zw,
+                   (CAST(sa AS DOUBLE)
+                      - CAST(m AS DOUBLE) * CAST(t1a AS DOUBLE)
+                        / CAST(n AS DOUBLE))
+                   / sqrt(CAST(m AS DOUBLE) * CAST(n - m AS DOUBLE)
+                          * (CAST(n AS DOUBLE)
+                               * CAST(CAST(t2a AS VARCHAR) AS DOUBLE)
+                             - CAST(t1a AS DOUBLE) * CAST(t1a AS DOUBLE))
+                          / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
+                             * CAST(n - 1 AS DOUBLE))) AS za
+            FROM moments
+        )
+        SELECT CAST(m AS BIGINT) AS n_x, CAST(n - m AS BIGINT) AS n_y,
+               zw AS z_wilcoxon, za AS z_ansari,
+               zw * zw + za * za AS lepage_l
+        FROM z
+    """,
+)
+def stat_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lepage two-sample test of returned vs normal line quantities:
+    L = z_Wilcoxon^2 + z_Ansari-Bradley^2 — the combined
+    LOCATION-AND-SCALE omnibus (Wilcoxon sees shifts, Ansari-Bradley
+    sees spread changes; Lepage catches either). Both z's come from
+    ONE general linear-rank-statistic frame valid under ties:
+    S = sum over x-rows of score, E[S] = m*T1/N, Var[S] =
+    m*(N-m)*(N*T2 - T1^2)/(N^2*(N-1)) with T1/T2 the score totals —
+    a NEW reusable recipe (any score vector, exact moments, no
+    closed-form tie corrections needed). Exactness: quantities
+    collapse to <=50 content-bounded value cells; doubled midranks
+    mr2 and doubled AB scores min(mr2, 2(N+1)-mr2) are exact BIGINTs
+    (the x2 scale cancels inside z); T2 accumulates in DECIMAL(38,0)
+    (score^2 ~ N^2 overflows int64 at cluster scale); each z is one
+    identically-parenthesized double expression; L is their square
+    sum. Distributed shape: one cell agg, cell-bounded windows,
+    1-row state."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_returnflag").isin("R", "N")
+    )
+    base = li.select(
+        F.col("l_quantity").cast("decimal(12,2)").alias("v"),
+        (F.col("l_returnflag") == "R").cast("int").alias("is_x"),
+    )
+    cells = base.groupBy("v").agg(
+        F.count(F.lit(1)).cast("bigint").alias("ct"),
+        F.sum("is_x").cast("bigint").alias("cx"),
+    )
+    w_cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    w_all = Window.partitionBy()
+    ranked = cells.select(
+        "ct",
+        "cx",
+        (
+            F.lit(2) * (F.sum("ct").over(w_cum) - F.col("ct"))
+            + F.col("ct")
+            + F.lit(1)
+        ).alias("mr2"),
+        F.sum("ct").over(w_all).cast("bigint").alias("n"),
+        F.sum("cx").over(w_all).cast("bigint").alias("m"),
+    )
+    scored = ranked.select(
+        "ct",
+        "cx",
+        "n",
+        "m",
+        "mr2",
+        F.least(
+            F.col("mr2"), F.lit(2) * (F.col("n") + 1) - F.col("mr2")
+        ).alias("ab2"),
+    )
+    dec = "decimal(38,0)"
+    mom = scored.agg(
+        F.max("n").alias("n"),
+        F.max("m").alias("m"),
+        F.sum(F.col("cx") * F.col("mr2")).cast("bigint").alias("sw"),
+        F.sum(F.col("ct") * F.col("mr2")).cast("bigint").alias("t1w"),
+        F.sum(F.col("ct").cast(dec) * F.col("mr2") * F.col("mr2")).alias(
+            "t2w"
+        ),
+        F.sum(F.col("cx") * F.col("ab2")).cast("bigint").alias("sa"),
+        F.sum(F.col("ct") * F.col("ab2")).cast("bigint").alias("t1a"),
+        F.sum(F.col("ct").cast(dec) * F.col("ab2") * F.col("ab2")).alias(
+            "t2a"
+        ),
+    )
+
+    def _z(s, t1, t2):
+        nd = F.col("n").cast("double")
+        md = F.col("m").cast("double")
+        nmd = (F.col("n") - F.col("m")).cast("double")
+        return (
+            F.col(s).cast("double")
+            - md * F.col(t1).cast("double") / nd
+        ) / F.sqrt(
+            md
+            * nmd
+            * (
+                nd * as_d(F.col(t2))
+                - F.col(t1).cast("double") * F.col(t1).cast("double")
+            )
+            / (nd * nd * (F.col("n") - 1).cast("double"))
+        )
+
+    zw = _z("sw", "t1w", "t2w")
+    za = _z("sa", "t1a", "t2a")
+    return mom.select(
+        F.col("m").cast("bigint").alias("n_x"),
+        (F.col("n") - F.col("m")).cast("bigint").alias("n_y"),
+        zw.alias("z_wilcoxon"),
+        za.alias("z_ansari"),
+        (zw * zw + za * za).alias("lepage_l"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# stat_theil_decomposition — between/within-segment inequality split
+
+
+@register(
+    "stat_theil_decomposition",
+    tags=("stats", "agg"),
+    oracle=f"""
+        WITH base AS (
+            SELECT c.c_mktsegment AS seg,
+                   CAST(CAST(o.o_totalprice AS DECIMAL(12,2)) * 100
+                        AS BIGINT) AS xc
+            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+            WHERE o.o_totalprice > 0
+        ),
+        per AS (
+            SELECT seg, CAST(COUNT(*) AS BIGINT) AS ng,
+                   CAST(SUM(xc) AS BIGINT) AS sg,
+                   CAST(SUM(CAST(xc AS DECIMAL(19,0))
+                            * CAST(ln(CAST(xc AS DOUBLE)
+                                      / CAST(100 AS DOUBLE))
+                                   AS DECIMAL(12,6)))
+                        AS DECIMAL(38,6)) AS sxlnx
+            FROM base GROUP BY seg
+        ),
+        tot AS (
+            SELECT CAST(SUM(ng) AS BIGINT) AS n,
+                   CAST(SUM(sg) AS BIGINT) AS s
+            FROM per
+        ),
+        terms AS (
+            SELECT seg, ng, sg, n, s,
+                   CAST(sg AS DOUBLE) / CAST(100 AS DOUBLE)
+                       / CAST(ng AS DOUBLE) AS mean_g,
+                   CAST(CAST(sxlnx AS VARCHAR) AS DOUBLE)
+                       / CAST(sg AS DOUBLE)
+                     - CAST(ln(CAST(sg AS DOUBLE) / CAST(100 AS DOUBLE)
+                               / CAST(ng AS DOUBLE)) AS DECIMAL(12,6))
+                       AS t_g,
+                   CAST(sg AS DOUBLE) / CAST(s AS DOUBLE) AS share_g,
+                   CAST(ln((CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE))
+                           / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
+                        AS DECIMAL(12,6)) AS ln_ratio
+            FROM per CROSS JOIN tot
+        ),
+        split AS (
+            SELECT
+                {o_ordered_fold_sum('seg', 'share_g * t_g')} AS t_within,
+                {o_ordered_fold_sum(
+                    'seg',
+                    'share_g * CAST(ln_ratio AS DOUBLE)',
+                )} AS t_between
+            FROM terms
+        )
+        SELECT tm.seg, tm.ng AS n_g, tm.mean_g, tm.t_g AS theil_within_g,
+               tm.share_g AS value_share,
+               sp.t_between, sp.t_within,
+               sp.t_between + sp.t_within AS theil_total
+        FROM terms tm CROSS JOIN split sp
+    """,
+)
+def stat_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil-T inequality DECOMPOSED across market segments — the
+    property that makes Theil the analyst's inequality index over
+    Gini: T_total = sum_g share_g * T_g (within) + sum_g share_g *
+    ln(mean_g / mean) (between), telling you whether order-value
+    dispersion lives inside segments or between them. Exactness: the
+    per-segment machinery is stat_theil_index's (quantized-ln
+    DECIMAL(12,6) per row, exact decimal log sums, integer cents);
+    shares and means are doubles off exact integers; BOTH k-term
+    folds run in pinned segment order (the ANOVA recipe); the
+    between-term ln quantizes identically on both engines.
+    Additivity to the single-scan stat_theil_index holds to
+    quantization precision (~1e-6), asserted by the independent
+    pytest, not the oracle. Distributed shape: one AQE-sized
+    customer join + one hash agg per segment; k-row state."""
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    base = o.join(c, o.o_custkey == c.c_custkey).select(
+        F.col("c_mktsegment").alias("seg"),
+        (F.col("o_totalprice").cast("decimal(12,2)") * F.lit(100))
+        .cast("bigint")
+        .alias("xc"),
+    )
+    lnx = F.log(F.col("xc").cast("double") / F.lit(100).cast("double")).cast(
+        "decimal(12,6)"
+    )
+    per = base.groupBy("seg").agg(
+        F.count(F.lit(1)).cast("bigint").alias("ng"),
+        F.sum("xc").cast("bigint").alias("sg"),
+        F.sum(F.col("xc").cast("decimal(19,0)") * lnx)
+        .cast("decimal(38,6)")
+        .alias("sxlnx"),
+    )
+    tot = per.agg(
+        F.sum("ng").cast("bigint").alias("n"),
+        F.sum("sg").cast("bigint").alias("s"),
+    )
+    mean_g = (
+        F.col("sg").cast("double")
+        / F.lit(100).cast("double")
+        / F.col("ng").cast("double")
+    )
+    t_g = as_d(F.col("sxlnx")) / F.col("sg").cast("double") - F.log(
+        mean_g
+    ).cast("decimal(12,6)")
+    share_g = F.col("sg").cast("double") / F.col("s").cast("double")
+    ln_ratio = F.log(
+        (F.col("sg").cast("double") / F.col("ng").cast("double"))
+        / (F.col("s").cast("double") / F.col("n").cast("double"))
+    ).cast("decimal(12,6)")
+    terms = per.crossJoin(F.broadcast(tot)).select(
+        "seg",
+        "ng",
+        mean_g.alias("mean_g"),
+        t_g.alias("t_g"),
+        share_g.alias("share_g"),
+        ln_ratio.alias("ln_ratio"),
+    )
+    split = terms.agg(
+        F.aggregate(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col("seg"),
+                        (F.col("share_g") * F.col("t_g")).alias("tw"),
+                    )
+                )
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x["tw"],
+        ).alias("t_within"),
+        F.aggregate(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col("seg"),
+                        (
+                            F.col("share_g") * as_d(F.col("ln_ratio"))
+                        ).alias("tb"),
+                    )
+                )
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x["tb"],
+        ).alias("t_between"),
+    )
+    return terms.crossJoin(F.broadcast(split)).select(
+        "seg",
+        F.col("ng").alias("n_g"),
+        "mean_g",
+        F.col("t_g").alias("theil_within_g"),
+        F.col("share_g").alias("value_share"),
+        "t_between",
+        "t_within",
+        (F.col("t_between") + F.col("t_within")).alias("theil_total"),
     )

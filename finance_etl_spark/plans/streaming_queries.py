@@ -22,7 +22,11 @@ from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.io.readers import load_table, parquet_schema
-from finance_etl_spark.plans.recipes import EVENT_DAILY_XQ_SQL
+from finance_etl_spark.plans.recipes import (
+    CUSUM_CHANGEPOINT_SQL,
+    PPL_THRESHOLD,
+    cusum_changepoint,
+)
 from finance_etl_spark.plans.registry import register
 
 
@@ -1262,9 +1266,6 @@ def stream_live_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(sink).orderBy("event_id")
 
 
-_PPLA_THR = "3.4"
-
-
 @register(
     "stream_live_perplexity_admission",
     tags=("streaming", "live", "text", "quality"),
@@ -1316,7 +1317,7 @@ _PPLA_THR = "3.4"
         SELECT d.doc_id AS new_id,
                COALESCE(s.n_bigrams, 0) AS n_bigrams,
                s.avg_nll,
-               COALESCE(s.avg_nll < {_PPLA_THR}, FALSE) AS admit
+               COALESCE(s.avg_nll < {PPL_THRESHOLD}, FALSE) AS admit
         FROM (SELECT doc_id FROM documents WHERE doc_id % 17 = 0) d
         LEFT JOIN scored s ON s.doc_id = d.doc_id
         ORDER BY new_id
@@ -1429,7 +1430,7 @@ def stream_live_perplexity_admission(
                 .alias("n_bigrams"),
                 "avg_nll",
                 F.coalesce(
-                    F.col("avg_nll") < F.expr(_PPLA_THR), F.lit(False)
+                    F.col("avg_nll") < F.expr(PPL_THRESHOLD), F.lit(False)
                 ).alias("admit"),
             )
         )
@@ -1447,48 +1448,10 @@ def stream_live_perplexity_admission(
     return spark.read.parquet(sink).orderBy("new_id")
 
 
-_CUSUM_ALARM_ORACLE = f"""
-        WITH daily AS (
-            {EVENT_DAILY_XQ_SQL}
-        ),
-        pre AS (
-            SELECT event_type, d, rn, xq,
-                   CAST(SUM(xq) OVER (PARTITION BY event_type ORDER BY rn
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix,
-                   CAST(SUM(xq) OVER (PARTITION BY event_type)
-                        AS BIGINT) AS s,
-                   CAST(COUNT(*) OVER (PARTITION BY event_type)
-                        AS BIGINT) AS n
-            FROM daily
-        ),
-        dev AS (
-            SELECT event_type, d, rn, prefix, s, n,
-                   abs(CAST(n AS DECIMAL(38,0)) * prefix
-                       - CAST(rn AS DECIMAL(38,0)) * s) AS dabs
-            FROM pre WHERE rn < n
-        ),
-        best AS (
-            SELECT event_type, d, rn, prefix, s, n, dabs,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                       ORDER BY dabs DESC, rn) AS pick
-            FROM dev
-        )
-        SELECT event_type, n, CAST(rn AS BIGINT) AS cp_index, d AS cp_date,
-               CAST(CAST(dabs AS VARCHAR) AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * 1e6) AS cusum_peak,
-               CAST(prefix AS DOUBLE) / (CAST(rn AS DOUBLE) * 1e6)
-                   AS mean_before,
-               CAST(s - prefix AS DOUBLE)
-                 / (CAST(n - rn AS DOUBLE) * 1e6) AS mean_after
-        FROM best WHERE pick = 1
-        ORDER BY event_type
-    """
-
-
 @register(
     "stream_live_cusum_alarm",
     tags=("streaming", "live", "stats"),
-    oracle=_CUSUM_ALARM_ORACLE,
+    oracle=CUSUM_CHANGEPOINT_SQL,
 )
 def stream_live_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming change-detection alarm: a real Structured Streaming
@@ -1528,45 +1491,4 @@ def stream_live_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(Window.partitionBy("event_type").orderBy("d")),
         )
     )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("rn")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("event_type")
-    pre = daily.select(
-        "event_type",
-        "d",
-        "rn",
-        F.sum("xq").over(wcum).cast("bigint").alias("prefix"),
-        F.sum("xq").over(wall).cast("bigint").alias("s"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
-    )
-    dev = pre.filter(F.col("rn") < F.col("n")).withColumn(
-        "dabs",
-        F.abs(
-            F.col("n").cast("decimal(38,0)") * F.col("prefix")
-            - F.col("rn").cast("decimal(38,0)") * F.col("s")
-        ),
-    )
-    wpick = Window.partitionBy("event_type").orderBy(F.col("dabs").desc(), F.col("rn"))
-    best = dev.withColumn("pick", F.row_number().over(wpick)).filter(
-        F.col("pick") == 1
-    )
-    return best.select(
-        "event_type",
-        "n",
-        F.col("rn").cast("bigint").alias("cp_index"),
-        F.col("d").alias("cp_date"),
-        (
-            F.col("dabs").cast("string").cast("double")
-            / (F.col("n").cast("double") * F.lit(1e6))
-        ).alias("cusum_peak"),
-        (
-            F.col("prefix").cast("double") / (F.col("rn").cast("double") * F.lit(1e6))
-        ).alias("mean_before"),
-        (
-            (F.col("s") - F.col("prefix")).cast("double")
-            / ((F.col("n") - F.col("rn")).cast("double") * F.lit(1e6))
-        ).alias("mean_after"),
-    ).orderBy("event_type")
+    return cusum_changepoint(daily)

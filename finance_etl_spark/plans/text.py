@@ -15,19 +15,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import fsum, o_fsum
+from finance_etl_spark.functions.money import as_d, fsum, o_fsum
 from finance_etl_spark.io.readers import load_table, load_table_parallel
 from finance_etl_spark.operators.ranks import global_rank_running_sums
-from finance_etl_spark.plans.recipes import TOKENS_SQL, tokens
+from finance_etl_spark.plans.recipes import (
+    HASH_SPLIT_TRAIN_HI,
+    HASH_SPLIT_VAL_HI,
+    PPL_THRESHOLD,
+    SPACE,
+    STOPWORDS,
+    TOKENS_SQL,
+    tokens,
+)
 from finance_etl_spark.plans.registry import register
-
-# Token = non-empty run split on single spaces; the fixture corpus is
-# space-joined. (A \s+ split would differ from DuckDB's string_split.)
-_SPACE = " "
-
-# Tiny stopword list used by the quality score; part of the declared
-# semantics, not a linguistic claim.
-STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
 
 
 @register(
@@ -190,7 +190,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_pat = r"[a-zA-Z0-9_]+|[^a-zA-Z0-9_\s]"
     return d.select(
         "doc_id",
-        F.size(F.split(F.col("text"), _SPACE)).alias("n_ws_tokens"),
+        F.size(F.split(F.col("text"), SPACE)).alias("n_ws_tokens"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(bpe_pat), 0)).alias(
             "n_bpe_ish_tokens"
         ),
@@ -215,7 +215,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled token order — catches paraphrase-by-reordering) plus the
     raw content digest."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
     return d.select(
         "doc_id",
         F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))).alias(
@@ -673,7 +673,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         F.posexplode(
-            F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+            F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
         ).alias("pos", "tok"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -756,7 +756,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group transform constants the same way).
     """
     d = load_table_parallel(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
     base = d.select("doc_id", toks.alias("__toks"))
     tk = F.col("__toks")
     bigrams = F.zip_with(
@@ -908,7 +908,7 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-doc chunk count is ceil(n_tok/40), so output size is
     linear in corpus tokens at any SF."""
     d = load_table_parallel(spark, sf_dir, "documents")
-    tk = F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+    tk = F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
     base = d.select("doc_id", tk.alias("__tk")).filter(F.size("__tk") >= 1)
     starts = F.sequence(F.lit(0), F.size("__tk") - 1, F.lit(40))
     rows = base.select(
@@ -1863,9 +1863,6 @@ def text_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LM_TRAIN_HI, _LM_TEST_LO = "cc", "e6"
-
-
 @register(
     "text_bigram_coverage",
     tags=("text", "lm", "dedup"),
@@ -1882,10 +1879,10 @@ _LM_TRAIN_HI, _LM_TEST_LO = "cc", "e6"
             FROM bigrams WHERE bg IS NOT NULL
         ),
         train_vocab AS (
-            SELECT DISTINCT bg FROM split_bg WHERE gate < '{_LM_TRAIN_HI}'
+            SELECT DISTINCT bg FROM split_bg WHERE gate < '{HASH_SPLIT_TRAIN_HI}'
         ),
         test_bg AS (
-            SELECT doc_id, bg FROM split_bg WHERE gate >= '{_LM_TEST_LO}'
+            SELECT doc_id, bg FROM split_bg WHERE gate >= '{HASH_SPLIT_VAL_HI}'
         )
         SELECT t.doc_id,
                CAST(COUNT(*) AS BIGINT) AS n_bigrams,
@@ -1928,10 +1925,10 @@ def text_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     train_vocab = (
-        bg.filter(F.col("gate") < _LM_TRAIN_HI).select("h").distinct()
+        bg.filter(F.col("gate") < HASH_SPLIT_TRAIN_HI).select("h").distinct()
         .withColumn("seen", F.lit(1))
     )
-    test_bg = bg.filter(F.col("gate") >= _LM_TEST_LO).select("doc_id", "h")
+    test_bg = bg.filter(F.col("gate") >= HASH_SPLIT_VAL_HI).select("doc_id", "h")
     joined = test_bg.join(train_vocab, "h", "left")
     return (
         joined.groupBy("doc_id")
@@ -2014,9 +2011,6 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PPL_THRESHOLD = "3.4"  # avg bigram NLL; docs above are dropped (splits ~40/60 at every SF)
-
-
 @register(
     "text_perplexity_filter",
     tags=("text", "quality", "lm"),
@@ -2057,7 +2051,7 @@ _PPL_THRESHOLD = "3.4"  # avg bigram NLL; docs above are dropped (splits ~40/60 
                CAST(CAST(-SUM(db.m * mo.logp) AS VARCHAR) AS DOUBLE)
                  / CAST(SUM(db.m) AS DOUBLE) AS avg_nll,
                (CAST(CAST(-SUM(db.m * mo.logp) AS VARCHAR) AS DOUBLE)
-                 / CAST(SUM(db.m) AS DOUBLE)) < {_PPL_THRESHOLD} AS kept
+                 / CAST(SUM(db.m) AS DOUBLE)) < {PPL_THRESHOLD} AS kept
         FROM doc_big db
         JOIN model mo ON mo.w1 = db.w1 AND mo.w2 = db.w2
         GROUP BY db.doc_id
@@ -2080,7 +2074,7 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     docs = d.select(
         "doc_id",
-        F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "").alias(
+        F.filter(F.split(F.col("text"), SPACE), lambda t: t != "").alias(
             "lst"
         ),
     ).persist()
@@ -2141,7 +2135,7 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_bigrams",
         "avg_nll",
-        (F.col("avg_nll") < F.expr(_PPL_THRESHOLD)).alias("kept"),
+        (F.col("avg_nll") < F.expr(PPL_THRESHOLD)).alias("kept"),
     )
 
 
@@ -2188,7 +2182,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     docs = d.select(
         "doc_id",
-        F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "").alias(
+        F.filter(F.split(F.col("text"), SPACE), lambda t: t != "").alias(
             "lst"
         ),
     ).persist()
@@ -2292,7 +2286,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     freqs = (
         d.select(
             F.explode(
-                F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+                F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
             ).alias("tok")
         )
         .groupBy("tok")
@@ -2487,7 +2481,7 @@ def text_rouge_l_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     seqs = d.select(
         "doc_id",
         F.slice(
-            F.filter(F.split(F.col("text"), _SPACE), lambda t: t != ""),
+            F.filter(F.split(F.col("text"), SPACE), lambda t: t != ""),
             1,
             _ROUGE_K,
         ).alias("toks"),
@@ -3052,7 +3046,7 @@ def text_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "lang",
         F.explode(
-            F.filter(F.split(F.col("text"), _SPACE), lambda t: t != "")
+            F.filter(F.split(F.col("text"), SPACE), lambda t: t != "")
         ).alias("tok"),
     )
     tc = toks.groupBy("lang", "tok").agg(
@@ -3081,3 +3075,1242 @@ def text_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_hapax").cast("double") / typ_d,
         ).alias("hapax_ratio"),
     ).orderBy("lang")
+
+
+@register(
+    "text_heaps_curve",
+    tags=("text", "tokenize", "window"),
+    oracle=r"""
+        WITH toks AS (
+            SELECT doc_id, lower(tok) AS tok
+            FROM (SELECT doc_id,
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                             AS tok
+                  FROM documents)
+        ),
+        firsts AS (
+            SELECT MIN(doc_id) AS first_doc FROM toks GROUP BY tok
+        ),
+        nt AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok
+            FROM toks GROUP BY doc_id
+        ),
+        nd AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS max_id FROM nt),
+        deciles AS (
+            SELECT CAST(dec AS INT) AS decile,
+                   CAST((max_id * dec) // 10 AS BIGINT) AS cutoff_id
+            FROM nd CROSS JOIN (SELECT unnest(range(1, 11)) AS dec)
+        )
+        SELECT d.decile,
+               CAST(SUM(nt.n_tok) AS BIGINT) AS cum_tokens,
+               (SELECT CAST(COUNT(*) AS BIGINT) FROM firsts f
+                WHERE f.first_doc <= d.cutoff_id) AS cum_vocab
+        FROM deciles d JOIN nt ON nt.doc_id <= d.cutoff_id
+        GROUP BY d.decile, d.cutoff_id
+        ORDER BY d.decile
+    """,
+)
+def text_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary-growth (Heaps' law) curve over the corpus in
+    doc-id order: cumulative distinct vocabulary vs cumulative token
+    count at ten corpus prefixes — the curve whose log-log slope is
+    Heaps' beta, the number that predicts how much NEW vocabulary the
+    next 10x of data buys (flattening = diminishing data returns, THE
+    dedup/curation planning signal). Exact integers: each type's
+    FIRST document (one token-key agg — the corpus never re-scans per
+    decile), per-doc token counts, and decile cutoffs in integer
+    arithmetic; vocab-at-cutoff probes the 10-row decile spine
+    against the first-doc relation. Fitting the exponent needs logs
+    and is left to the consumer — the curve itself is engine-exact."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(
+            F.expr(r"regexp_extract_all(text, '[a-zA-Z0-9_]+', 0)")
+        ).alias("tok"),
+    ).select("doc_id", F.lower("tok").alias("tok"))
+    firsts = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
+    nt = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_tok")
+    )
+    max_id = nt.agg(F.max("doc_id").cast("bigint").alias("max_id"))
+    decs = spark.range(1, 11).select(F.col("id").cast("int").alias("decile"))
+    deciles = decs.crossJoin(F.broadcast(max_id)).select(
+        "decile",
+        F.expr("CAST((max_id * decile) DIV 10 AS BIGINT)").alias("cutoff_id"),
+    )
+    tok_cum = (
+        nt.crossJoin(F.broadcast(deciles))
+        .filter(F.col("doc_id") <= F.col("cutoff_id"))
+        .groupBy("decile", "cutoff_id")
+        .agg(F.sum("n_tok").cast("bigint").alias("cum_tokens"))
+    )
+    voc_cum = (
+        firsts.crossJoin(F.broadcast(deciles))
+        .filter(F.col("first_doc") <= F.col("cutoff_id"))
+        .groupBy("decile")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cum_vocab"))
+    )
+    return (
+        tok_cum.join(voc_cum, "decile")
+        .select("decile", "cum_tokens", "cum_vocab")
+        .orderBy("decile")
+    )
+
+
+@register(
+    "text_ngram_entropy",
+    tags=("text", "tokenize", "agg"),
+    oracle=r"""
+        WITH toks AS (
+            SELECT lower(tok) AS tok
+            FROM (SELECT unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                      AS tok
+                  FROM documents)
+        ),
+        uni AS (
+            SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_v FROM toks GROUP BY tok
+        ),
+        tot AS (SELECT CAST(SUM(n_v) AS BIGINT) AS n FROM uni)
+        SELECT tot.n AS n_tokens,
+               CAST(COUNT(*) AS BIGINT) AS vocab,
+               -CAST(CAST(SUM(n_v * CAST(ln(CAST(n_v AS DOUBLE)
+                        / CAST(tot.n AS DOUBLE)) AS DECIMAL(12,6)))
+                     AS VARCHAR) AS DOUBLE) / CAST(tot.n AS DOUBLE)
+                   AS entropy_nats,
+               CAST(CAST(SUM(CAST(n_v AS DECIMAL(38,0)) * n_v)
+                    AS VARCHAR) AS DOUBLE)
+                 / (CAST(tot.n AS DOUBLE) * tot.n) AS simpson_repeat_prob
+        FROM uni CROSS JOIN tot
+        GROUP BY tot.n
+    """,
+)
+def text_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram Shannon entropy and Simpson repeat probability of the
+    corpus token distribution — the two diversity numbers a training-
+    data mix report leads with (entropy near ln(V) = flat/diverse;
+    Simpson = chance two random tokens coincide, the collision view
+    of the same skew). Engine-exact via the quantized-log recipe
+    (dq_column_entropy precedent): ln(p_v) quantizes to DECIMAL(12,6)
+    per distinct token, H = -sum n_v ln_q(p_v) / N is then an exact
+    decimal dot product; Simpson is fully exact (sum n_v^2 in
+    DECIMAL(38,0) over N^2). One token-key shuffle, vocab-sized
+    state."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    toks = d.select(
+        F.explode(
+            F.expr(r"regexp_extract_all(text, '[a-zA-Z0-9_]+', 0)")
+        ).alias("tok0")
+    ).select(F.lower("tok0").alias("tok"))
+    uni = toks.groupBy("tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_v")
+    )
+    tot_w = Window.partitionBy()
+    lnq = F.log(
+        F.col("n_v").cast("double")
+        / F.sum("n_v").over(tot_w).cast("double")
+    ).cast("decimal(12,6)")
+    terms = uni.select(
+        "n_v",
+        (F.col("n_v") * lnq).alias("hterm"),
+        (F.col("n_v").cast("decimal(38,0)") * F.col("n_v")).alias("sq"),
+    )
+    return terms.agg(
+        F.sum("n_v").cast("bigint").alias("n_tokens"),
+        F.count(F.lit(1)).cast("bigint").alias("vocab"),
+        (
+            (-as_d(F.sum("hterm")))
+            / F.sum("n_v").cast("double")
+        ).alias("entropy_nats"),
+        (
+            as_d(F.sum("sq").cast("decimal(38,0)"))
+            / (
+                F.sum("n_v").cast("double")
+                * F.sum("n_v").cast("double")
+            )
+        ).alias("simpson_repeat_prob"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_js_divergence — corpus-vs-corpus vocabulary shift
+
+
+@register(
+    "text_js_divergence",
+    tags=("text", "tokenize", "agg"),
+    oracle=r"""
+        WITH toks AS (
+            SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en,
+                   lower(tok) AS tok
+            FROM (SELECT lang,
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                             AS tok
+                  FROM documents)
+        ),
+        cnt AS (
+            SELECT tok,
+                   CAST(SUM(is_en) AS BIGINT) AS np,
+                   CAST(SUM(1 - is_en) AS BIGINT) AS nq
+            FROM toks GROUP BY tok
+        ),
+        tot AS (
+            SELECT CAST(SUM(np) AS BIGINT) AS tp,
+                   CAST(SUM(nq) AS BIGINT) AS tq
+            FROM cnt
+        ),
+        terms AS (
+            SELECT np, nq, tp, tq,
+                   CASE WHEN np > 0 THEN np * CAST(ln(
+                     CAST(2 AS DOUBLE) * (CAST(np AS DOUBLE) / tp)
+                     / (CAST(np AS DOUBLE) / tp + CAST(nq AS DOUBLE) / tq)
+                   ) AS DECIMAL(12,6)) ELSE CAST(0 AS DECIMAL(12,6)) END
+                       AS hp,
+                   CASE WHEN nq > 0 THEN nq * CAST(ln(
+                     CAST(2 AS DOUBLE) * (CAST(nq AS DOUBLE) / tq)
+                     / (CAST(np AS DOUBLE) / tp + CAST(nq AS DOUBLE) / tq)
+                   ) AS DECIMAL(12,6)) ELSE CAST(0 AS DECIMAL(12,6)) END
+                       AS hq
+            FROM cnt CROSS JOIN tot
+        )
+        SELECT tp AS n_tokens_en, tq AS n_tokens_other,
+               CAST(SUM(CASE WHEN np > 0 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS vocab_en,
+               CAST(SUM(CASE WHEN nq > 0 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS vocab_other,
+               (CAST(CAST(SUM(hp) AS VARCHAR) AS DOUBLE) / tp
+                + CAST(CAST(SUM(hq) AS VARCHAR) AS DOUBLE) / tq)
+               / CAST(2 AS DOUBLE) AS jsd_nats
+        FROM terms GROUP BY tp, tq
+    """,
+)
+def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jensen-Shannon divergence between the English and non-English
+    unigram distributions of the document corpus — the symmetric,
+    bounded (<= ln 2) distribution-shift number a training-mix report
+    uses to quantify how different two slices' vocabularies are (Lin
+    1991). Engine-exact via the quantized-log recipe
+    (text_ngram_entropy precedent): each distinct token's
+    ln(2*p/(p+q)) is ONE deterministic double expression quantized to
+    DECIMAL(12,6), so both KL halves are exact decimal dot products
+    with n_p/n_q integer weights, and JSD assembles from two exact
+    sums with divisions only at the edge (absent-side terms are
+    exactly 0 by the np>0/nq>0 gates — JSD needs no smoothing, unlike
+    KL). One token-key shuffle, vocab-sized state; the totals window
+    rides the vocab-bounded count relation."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    toks = d.select(
+        F.when(F.col("lang") == "en", 1).otherwise(0).alias("is_en"),
+        F.explode(
+            F.expr(r"regexp_extract_all(text, '[a-zA-Z0-9_]+', 0)")
+        ).alias("tok0"),
+    ).select("is_en", F.lower("tok0").alias("tok"))
+    cnt = toks.groupBy("tok").agg(
+        F.sum("is_en").cast("bigint").alias("np"),
+        F.sum(1 - F.col("is_en")).cast("bigint").alias("nq"),
+    )
+    wall = Window.partitionBy()
+    tp = F.sum("np").over(wall).cast("bigint")
+    tq = F.sum("nq").over(wall).cast("bigint")
+    p = F.col("np").cast("double") / F.col("tp").cast("double")
+    q = F.col("nq").cast("double") / F.col("tq").cast("double")
+    zero6 = F.lit(0).cast("decimal(12,6)")
+    terms = cnt.select(
+        "np",
+        "nq",
+        tp.alias("tp"),
+        tq.alias("tq"),
+    ).select(
+        "np",
+        "nq",
+        "tp",
+        "tq",
+        F.when(
+            F.col("np") > 0,
+            F.col("np")
+            * F.log(F.lit(2.0) * p / (p + q)).cast("decimal(12,6)"),
+        )
+        .otherwise(zero6)
+        .alias("hp"),
+        F.when(
+            F.col("nq") > 0,
+            F.col("nq")
+            * F.log(F.lit(2.0) * q / (p + q)).cast("decimal(12,6)"),
+        )
+        .otherwise(zero6)
+        .alias("hq"),
+    )
+    return terms.groupBy("tp", "tq").agg(
+        F.sum(F.when(F.col("np") > 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("vocab_en"),
+        F.sum(F.when(F.col("nq") > 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("vocab_other"),
+        (
+            (
+                as_d(F.sum("hp")) / F.col("tp").cast("double")
+                + as_d(F.sum("hq")) / F.col("tq").cast("double")
+            )
+            / F.lit(2.0)
+        ).alias("jsd_nats"),
+    ).select(
+        F.col("tp").alias("n_tokens_en"),
+        F.col("tq").alias("n_tokens_other"),
+        "vocab_en",
+        "vocab_other",
+        "jsd_nats",
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_levenshtein_profile — bucketed edit-distance audit
+
+
+@register(
+    "text_levenshtein_profile",
+    tags=("text", "dedup", "join"),
+    oracle="""
+        WITH pairs AS (
+            SELECT a1.p_partkey // 16 AS bkt,
+                   levenshtein(a1.p_name, a2.p_name) AS lev
+            FROM part a1
+            JOIN part a2 ON a1.p_partkey // 16 = a2.p_partkey // 16
+                        AND a1.p_partkey < a2.p_partkey
+        )
+        SELECT CAST(lev // 5 AS INT) AS lev_bucket,
+               CAST(COUNT(*) AS BIGINT) AS n_pairs,
+               CAST(MIN(lev) AS BIGINT) AS min_lev,
+               CAST(MAX(lev) AS BIGINT) AS max_lev,
+               CAST(SUM(CAST(lev AS BIGINT)) AS BIGINT) AS sum_lev
+        FROM pairs
+        GROUP BY 1 ORDER BY lev_bucket
+    """,
+)
+def text_levenshtein_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance profile of part names over CONSTANT-SIZE key
+    buckets (p_partkey div 16, 120 pairs per bucket): the histogram of
+    Levenshtein distances (5-wide bins) across all within-bucket
+    pairs — the character-level name-collision audit of the dedup
+    family (minhash covers token similarity; this covers typo-scale
+    similarity), with a near-duplicate signal showing up as mass in
+    the low bins. Constant bucket size is the scale contract a fixed
+    PREFIX block cannot give (block population grows linearly with
+    the corpus until every block trips a size cap and the operator
+    goes dark — measured at sf0.01 with 5-char blocks): here total
+    pair cost is exactly 7.5 pairs per part at EVERY SF and the pair
+    join shuffles on the bucket key. Levenshtein is an integer metric
+    both engines implement identically (pinned against a pure-Python
+    DP in the reference test); the histogram is exact integer
+    aggregation."""
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
+    a1 = p.select(
+        F.expr("p_partkey div 16").alias("bkt"),
+        F.col("p_partkey").alias("k1"),
+        F.col("p_name").alias("name1"),
+    )
+    a2 = p.select(
+        F.expr("p_partkey div 16").alias("bkt"),
+        F.col("p_partkey").alias("k2"),
+        F.col("p_name").alias("name2"),
+    )
+    pairs = a1.join(a2, "bkt").filter(F.col("k1") < F.col("k2")).select(
+        F.levenshtein("name1", "name2").alias("lev")
+    )
+    return (
+        pairs.groupBy(F.expr("lev div 5").cast("int").alias("lev_bucket"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            F.min("lev").cast("bigint").alias("min_lev"),
+            F.max("lev").cast("bigint").alias("max_lev"),
+            F.sum(F.col("lev").cast("bigint")).cast("bigint").alias("sum_lev"),
+        )
+        .orderBy("lev_bucket")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ---------------------------------------------------------------------------
+# text_sentence_stats — sentence segmentation profile per source
+
+
+@register(
+    "text_sentence_stats",
+    tags=("text", "agg"),
+    oracle="""
+        WITH per_doc AS (
+            SELECT source,
+                   CAST(len(list_filter(
+                       regexp_split_to_array(text, '[.!?]+'),
+                       s -> len(trim(s)) > 0)) AS BIGINT) AS n_sent,
+                   CAST(len(list_filter(
+                       regexp_split_to_array(text, '[ \t\n\r]+'),
+                       w -> len(w) > 0)) AS BIGINT) AS n_words
+            FROM documents
+        )
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(n_sent) AS BIGINT) AS total_sentences,
+               CAST(SUM(n_words) AS BIGINT) AS total_words,
+               CAST(SUM(n_sent) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
+                   AS sentences_per_doc,
+               CASE WHEN SUM(n_sent) > 0 THEN
+                 CAST(SUM(n_words) AS DOUBLE) / CAST(SUM(n_sent) AS DOUBLE)
+               END AS words_per_sentence
+        FROM per_doc GROUP BY source ORDER BY source
+    """,
+)
+def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sentence segmentation profile per document source: sentence
+    count (split on [.!?]+ runs, empty/whitespace fragments dropped),
+    whitespace token count, and the derived sentences-per-doc /
+    words-per-sentence averages — the structural half of text quality
+    scoring (text_readability_fk consumes exactly these counts; this
+    operator exposes them as an auditable aggregate). The split
+    patterns use only regex constructs java.util.regex and RE2
+    interpret identically (character classes + '+', the cur_pii_redact
+    rule); counts are integers, the two averages single guarded
+    divisions. Sources with only unpunctuated docs NULL
+    words_per_sentence identically. One scan, one |sources|-row
+    agg."""
+    d = load_table(spark, sf_dir, "documents")
+    sents = F.filter(
+        F.split(F.col("text"), "[.!?]+"),
+        lambda s: F.length(F.trim(s)) > 0,
+    )
+    words = F.filter(
+        F.split(F.col("text"), "[ \t\n\r]+"), lambda w: F.length(w) > 0
+    )
+    per_doc = d.select(
+        "source",
+        F.size(sents).cast("bigint").alias("n_sent"),
+        F.size(words).cast("bigint").alias("n_words"),
+    )
+    return (
+        per_doc.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("n_sent").cast("bigint").alias("total_sentences"),
+            F.sum("n_words").cast("bigint").alias("total_words"),
+        )
+        .select(
+            "source",
+            "n_docs",
+            "total_sentences",
+            "total_words",
+            (
+                F.col("total_sentences").cast("double")
+                / F.col("n_docs").cast("double")
+            ).alias("sentences_per_doc"),
+            F.when(
+                F.col("total_sentences") > 0,
+                F.col("total_words").cast("double")
+                / F.col("total_sentences").cast("double"),
+            ).alias("words_per_sentence"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_hapax_ratio — vocabulary-tail health per source
+
+
+@register(
+    "text_hapax_ratio",
+    tags=("text", "agg"),
+    oracle="""
+        WITH toks AS (
+            SELECT source, UNNEST(list_filter(
+                       regexp_split_to_array(lower(text), '[^a-z]+'),
+                       t -> len(t) > 0)) AS tok
+            FROM documents
+        ),
+        counts AS (
+            SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS c
+            FROM toks GROUP BY source, tok
+        )
+        SELECT source,
+               CAST(SUM(c) AS BIGINT) AS n_tokens,
+               CAST(COUNT(*) AS BIGINT) AS vocab,
+               CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_hapax,
+               CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+                   / CAST(COUNT(*) AS DOUBLE) AS hapax_ratio
+        FROM counts GROUP BY source ORDER BY source
+    """,
+)
+def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hapax legomena share of each source's vocabulary: the fraction
+    of distinct tokens occurring exactly once — the vocabulary-tail
+    health number that complements text_heaps_curve (growth) and
+    text_type_token_ratio (breadth): natural prose runs ~0.4-0.6
+    hapax; templated or looped text collapses it. Lower-cased alpha
+    tokenization with the cross-engine-safe regex subset; counts are
+    exact integers aggregated on the (source, token) key — shuffle is
+    on the token space, and a df-style skew cap is unnecessary because
+    the reduction is a plain count. Ratio is one division (vocab > 0
+    whenever a source has any alpha text; empty-vocab sources drop
+    from the group-by identically)."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "source",
+        F.explode(
+            F.filter(
+                F.split(F.lower(F.col("text")), "[^a-z]+"),
+                lambda t: F.length(t) > 0,
+            )
+        ).alias("tok"),
+    )
+    counts = toks.groupBy("source", "tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
+    )
+    return (
+        counts.groupBy("source")
+        .agg(
+            F.sum("c").cast("bigint").alias("n_tokens"),
+            F.count(F.lit(1)).cast("bigint").alias("vocab"),
+            F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_hapax"),
+        )
+        .select(
+            "source",
+            "n_tokens",
+            "vocab",
+            "n_hapax",
+            (
+                F.col("n_hapax").cast("double") / F.col("vocab").cast("double")
+            ).alias("hapax_ratio"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_yule_k — lexical richness (Yule's characteristic K)
+
+
+@register(
+    "text_yule_k",
+    tags=("text", "tokenize", "agg"),
+    oracle=r"""
+        WITH toks AS (
+            SELECT lower(tok) AS tok
+            FROM (SELECT unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                      AS tok
+                  FROM documents)
+        ),
+        uni AS (
+            SELECT tok, CAST(COUNT(*) AS BIGINT) AS f FROM toks GROUP BY tok
+        )
+        SELECT CAST(SUM(f) AS BIGINT) AS n_tokens,
+               CAST(COUNT(*) AS BIGINT) AS vocab,
+               CAST(SUM(CAST(f AS DECIMAL(38,0)) * f) AS BIGINT)
+                   AS sum_freq_sq,
+               CAST('10000.0' AS DOUBLE)
+                 * CAST(CAST(SUM(CAST(f AS DECIMAL(38,0)) * f) - SUM(f)
+                        AS VARCHAR) AS DOUBLE)
+                 / (CAST(SUM(f) AS DOUBLE) * CAST(SUM(f) AS DOUBLE))
+                   AS yule_k
+        FROM uni
+    """,
+)
+def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Yule's characteristic K of the corpus token distribution:
+    K = 10^4 * (sum_f f^2 - N) / N^2 over the word-frequency spectrum
+    — the classic repeat-rate lexical-richness constant (Yule 1944),
+    length-insensitive where raw TTR is not; high K = a token
+    distribution dominated by few types (boilerplate-heavy corpora
+    score high, which is why K appears in corpus-quality report
+    cards). Same tokenization as text_ngram_entropy. Everything is
+    exact integer arithmetic (sum f, sum f^2 in DECIMAL(38,0)) until
+    the one double division at the presentation edge. One token-key
+    shuffle, vocab-sized state."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    toks = d.select(
+        F.explode(
+            F.expr(r"regexp_extract_all(text, '[a-zA-Z0-9_]+', 0)")
+        ).alias("tok0")
+    ).select(F.lower("tok0").alias("tok"))
+    uni = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("f"))
+    return uni.agg(
+        F.sum("f").cast("bigint").alias("n_tokens"),
+        F.count(F.lit(1)).cast("bigint").alias("vocab"),
+        F.sum(F.col("f").cast("decimal(38,0)") * F.col("f"))
+        .cast("bigint")
+        .alias("sum_freq_sq"),
+        (
+            F.lit("10000.0").cast("double")
+            * as_d(
+                F.sum(F.col("f").cast("decimal(38,0)") * F.col("f"))
+                - F.sum("f")
+            )
+            / (F.sum("f").cast("double") * F.sum("f").cast("double"))
+        ).alias("yule_k"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_langid_confusion — row-normalized confusion matrix of the
+# lang-id heuristic against the labeled corpus
+
+
+@register(
+    "text_langid_confusion",
+    tags=("text", "langid", "ml-eval"),
+    oracle=f"""
+        WITH toks AS ({TOKENS_SQL}),
+        profile AS (
+            SELECT d.lang, t.tok, COUNT(*) AS cnt
+            FROM toks t JOIN documents d ON t.doc_id = d.doc_id
+            GROUP BY d.lang, t.tok
+        ),
+        totals AS (SELECT lang, SUM(cnt) AS total FROM profile GROUP BY lang),
+        weights AS (
+            SELECT p.lang, p.tok,
+                   CAST((p.cnt * 1000000) // t.total AS BIGINT) AS w
+            FROM profile p JOIN totals t ON p.lang = t.lang
+        ),
+        scores AS (
+            SELECT t.doc_id, w.lang, CAST(SUM(w.w) AS BIGINT) AS score
+            FROM toks t JOIN weights w ON t.tok = w.tok
+            GROUP BY t.doc_id, w.lang
+        ),
+        ranked AS (
+            SELECT doc_id, lang AS pred_lang,
+                   ROW_NUMBER() OVER (PARTITION BY doc_id
+                                      ORDER BY score DESC, lang) AS rn
+            FROM scores
+        ),
+        cellsrc AS (
+            SELECT d.lang AS true_lang, r.pred_lang
+            FROM ranked r JOIN documents d ON r.doc_id = d.doc_id
+            WHERE r.rn = 1
+        ),
+        cellagg AS (
+            SELECT true_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+            FROM cellsrc GROUP BY 1, 2
+        ),
+        truetot AS (
+            SELECT true_lang, CAST(SUM(n_docs) AS BIGINT) AS t
+            FROM cellagg GROUP BY 1
+        )
+        SELECT c.true_lang, c.pred_lang, c.n_docs,
+               CAST(c.n_docs AS DOUBLE) / CAST(t.t AS DOUBLE) AS cell_share
+        FROM cellagg c JOIN truetot t ON t.true_lang = c.true_lang
+    """,
+)
+def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Row-normalized confusion matrix of the n-gram-profile language
+    identifier (text_lang_id's exact pipeline) against the corpus's
+    labels: (true_lang, pred_lang, n_docs, cell_share) where
+    cell_share = n / row total, so the diagonal reads per-language
+    RECALL — the honest-instrument companion the lang-id op was
+    missing (the ANN_EVAL discipline applied to language ID). The
+    scoring pipeline is integer-exact end-to-end (integer-scaled
+    profile weights, integer score argmax with a name tiebreak); the
+    confusion cells are exact counts and each share is one division.
+    Corpus work: the two profile aggs + one token join — identical to
+    text_lang_id; the added confusion agg is language-grid-sized."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    toks = tokens(d)
+    profile = (
+        toks.join(d.select("doc_id", "lang"), "doc_id")
+        .groupBy("lang", "tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    totals = profile.groupBy("lang").agg(F.sum("cnt").alias("total"))
+    weights = profile.join(totals, "lang").select(
+        "lang", "tok", F.expr("(cnt * 1000000) DIV total").alias("w")
+    )
+    scores = (
+        toks.join(weights, "tok")
+        .groupBy("doc_id", "lang")
+        .agg(F.sum("w").alias("score"))
+    )
+    w_rank = Window.partitionBy("doc_id").orderBy(
+        F.col("score").desc(), F.col("lang")
+    )
+    pred = (
+        scores.withColumn("rn", F.row_number().over(w_rank))
+        .filter(F.col("rn") == 1)
+        .select("doc_id", F.col("lang").alias("pred_lang"))
+    )
+    cells = (
+        pred.join(d.select("doc_id", F.col("lang").alias("true_lang")), "doc_id")
+        .groupBy("true_lang", "pred_lang")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+    )
+    truetot = cells.groupBy("true_lang").agg(
+        F.sum("n_docs").cast("bigint").alias("t")
+    )
+    return cells.join(truetot, "true_lang").select(
+        "true_lang",
+        "pred_lang",
+        "n_docs",
+        (F.col("n_docs").cast("double") / F.col("t").cast("double")).alias(
+            "cell_share"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_simpson_diversity — Simpson's D / inverse Simpson per source
+
+
+@register(
+    "text_simpson_diversity",
+    tags=("text", "tokenize", "agg"),
+    oracle=r"""
+        WITH toks AS (
+            SELECT source, lower(tok) AS tok
+            FROM (SELECT source,
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                             AS tok
+                  FROM documents)
+        ),
+        uni AS (
+            SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS n
+            FROM toks GROUP BY source, tok
+        )
+        SELECT source,
+               CAST(SUM(n) AS BIGINT) AS n_tokens,
+               CAST(COUNT(*) AS BIGINT) AS vocab,
+               CAST(SUM(n * (n - 1)) AS BIGINT) AS nn1,
+               CASE WHEN SUM(n) > 1 THEN
+                 CAST(SUM(n * (n - 1)) AS DOUBLE)
+                   / (CAST(SUM(n) AS DOUBLE)
+                      * (CAST(SUM(n) AS DOUBLE) - CAST(1 AS DOUBLE)))
+               END AS simpson_d,
+               CASE WHEN SUM(n * (n - 1)) > 0 THEN
+                 (CAST(SUM(n) AS DOUBLE)
+                    * (CAST(SUM(n) AS DOUBLE) - CAST(1 AS DOUBLE)))
+                   / CAST(SUM(n * (n - 1)) AS DOUBLE)
+               END AS inv_simpson
+        FROM uni GROUP BY source
+    """,
+)
+def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Simpson's diversity: D = sum n_v(n_v-1) / (N(N-1)) —
+    the probability two tokens drawn without replacement from one
+    source coincide — and the inverse-Simpson "effective vocabulary
+    size" 1/D, the single number a training-mix report uses to compare
+    how repetitive each source is (complements corpus-level
+    text_ngram_entropy, which can't attribute skew to a source). Both
+    are EXACT up to one presentation division: token counts and
+    sum n(n-1) are BIGINTs. Distributed shape: one (source, token)
+    hash agg (map-side combining) then source-level state — vocab-
+    bounded, no shuffle of raw token instances beyond the count agg."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    toks = d.select(
+        "source",
+        F.explode(
+            F.expr(r"regexp_extract_all(text, '[a-zA-Z0-9_]+', 0)")
+        ).alias("tok0"),
+    ).select("source", F.lower("tok0").alias("tok"))
+    uni = toks.groupBy("source", "tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    one = F.lit(1).cast("double")
+    agg = uni.groupBy("source").agg(
+        F.sum("n").cast("bigint").alias("n_tokens"),
+        F.count(F.lit(1)).cast("bigint").alias("vocab"),
+        F.sum(F.col("n") * (F.col("n") - 1)).cast("bigint").alias("nn1"),
+    )
+    nd = F.col("n_tokens").cast("double")
+    return agg.select(
+        "source",
+        "n_tokens",
+        "vocab",
+        "nn1",
+        F.when(
+            F.col("n_tokens") > 1,
+            F.col("nn1").cast("double") / (nd * (nd - one)),
+        ).alias("simpson_d"),
+        F.when(
+            F.col("nn1") > 0,
+            (nd * (nd - one)) / F.col("nn1").cast("double"),
+        ).alias("inv_simpson"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_burstiness — variance-to-mean ratio of per-doc token counts
+
+
+@register(
+    "text_burstiness",
+    tags=("text", "tokenize", "window"),
+    oracle=r"""
+        WITH dtot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents),
+        percell AS (
+            SELECT doc_id, lower(tok) AS tok, CAST(COUNT(*) AS BIGINT) AS c
+            FROM (SELECT doc_id,
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                             AS tok
+                  FROM documents)
+            GROUP BY doc_id, tok
+        ),
+        pertok AS (
+            SELECT tok, CAST(SUM(c) AS BIGINT) AS t_total,
+                   CAST(COUNT(*) AS BIGINT) AS df,
+                   CAST(SUM(c * c) AS BIGINT) AS s2
+            FROM percell GROUP BY tok
+        ),
+        ranked AS (
+            SELECT tok, t_total, df, s2,
+                   CAST(ROW_NUMBER() OVER (ORDER BY t_total DESC, tok)
+                        AS INT) AS rk
+            FROM pertok
+        )
+        SELECT tok, t_total, df, s2, rk,
+               CAST(nd * s2 - t_total * t_total AS DOUBLE)
+                 / CAST((nd - 1) * t_total AS DOUBLE) AS vmr
+        FROM ranked CROSS JOIN dtot
+        WHERE rk <= 40
+    """,
+)
+def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token burstiness for the top-40 corpus tokens: the
+    variance-to-mean ratio (Fano factor) of per-document counts over
+    ALL documents — VMR 1 = Poisson scatter, >1 = bursty (a token that
+    clumps into few documents: boilerplate, code, spam), the standard
+    screen for tokens whose corpus frequency misrepresents their
+    document spread (Church-Gale). Exactness: VMR = (D*S2 - T^2) /
+    ((D-1)*T) with D, S2 (sum of squared per-doc counts), T all exact
+    BIGINTs — numerator and denominator are exact integers, one
+    presentation division. Distributed shape: (doc, token) count agg
+    -> token-level state; the top-40 is one TakeOrdered-style rank,
+    deterministic via the (count desc, token) tiebreak."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    dtot = d.agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
+    percell = (
+        d.select(
+            "doc_id",
+            F.explode(
+                F.expr(r"regexp_extract_all(text, '[a-zA-Z0-9_]+', 0)")
+            ).alias("tok0"),
+        )
+        .select("doc_id", F.lower("tok0").alias("tok"))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    pertok = percell.groupBy("tok").agg(
+        F.sum("c").cast("bigint").alias("t_total"),
+        F.count(F.lit(1)).cast("bigint").alias("df"),
+        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("s2"),
+    )
+    ranked = pertok.select(
+        "tok",
+        "t_total",
+        "df",
+        "s2",
+        F.row_number()
+        .over(Window.orderBy(F.col("t_total").desc(), "tok"))
+        .cast("int")
+        .alias("rk"),
+    ).filter(F.col("rk") <= 40)
+    return ranked.crossJoin(F.broadcast(dtot)).select(
+        "tok",
+        "t_total",
+        "df",
+        "s2",
+        "rk",
+        (
+            (F.col("nd") * F.col("s2") - F.col("t_total") * F.col("t_total"))
+            .cast("double")
+            / ((F.col("nd") - 1) * F.col("t_total")).cast("double")
+        ).alias("vmr"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_boilerplate_ngrams — corpus-frequency boilerplate detection
+
+
+@register(
+    "text_boilerplate_ngrams",
+    tags=("text", "dedup", "agg"),
+    oracle="""
+        WITH toks AS (
+            SELECT doc_id, source,
+                   list_filter(string_split(text, ' '), t -> t <> '') AS ts
+            FROM documents
+        ),
+        grams AS MATERIALIZED (
+            SELECT DISTINCT doc_id, source,
+                   array_to_string(ts[i:i+4], ' ') AS g
+            FROM toks, UNNEST(generate_series(1, len(ts) - 4)) AS u(i)
+            WHERE len(ts) >= 5
+        ),
+        dfs AS MATERIALIZED (
+            SELECT g, CAST(COUNT(*) AS BIGINT) AS df
+            FROM grams GROUP BY g
+        )
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT) AS n_gram_instances,
+               CAST(SUM(CASE WHEN df >= 3 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_boiler_instances,
+               CAST(COUNT(DISTINCT CASE WHEN df >= 3 THEN gr.g END)
+                    AS BIGINT) AS n_boiler_distinct,
+               CAST(SUM(CASE WHEN df >= 3 THEN 1 ELSE 0 END) AS DOUBLE)
+                 / CAST(COUNT(*) AS DOUBLE) AS boiler_ratio
+        FROM grams gr JOIN dfs USING (g)
+        GROUP BY source
+    """,
+)
+def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Boilerplate-shingle profile per source: a 5-token shingle (the
+    whitespace tokenization the MinHash pipeline uses, deduplicated
+    WITHIN each document) is BOILERPLATE when it appears in >= 3
+    distinct documents — the span-frequency rule production
+    pretraining pipelines run before document-level dedup (C4's
+    repeated-span removal, CCNet's paragraph hashes): navigation
+    chrome and template text repeat across pages that are otherwise
+    unique, and document dedup can't see them. Reported per source:
+    shingle instances (per-doc distinct), boilerplate instances,
+    distinct boilerplate shingles, and the contamination ratio a
+    span-cleaning pass would target. All counts exact; one division.
+    Distributed shape: the shingle explode is transient (collapsed by
+    the per-doc DISTINCT before any exchange), document frequencies
+    are one shingle-key hash agg, and the join back is a second
+    shuffle on the same key — nothing quadratic, no driver state."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    ts = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    grams_arr = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.size(F.col("ts")) - 4),
+            lambda i: F.array_join(F.slice(F.col("ts"), i, 5), " "),
+        )
+    )
+    grams = (
+        d.select("doc_id", "source", ts.alias("ts"))
+        .filter(F.size("ts") >= 5)
+        .select("doc_id", "source", F.explode(grams_arr).alias("g"))
+        .persist()
+    )
+    dfs = grams.groupBy("g").agg(
+        F.count(F.lit(1)).cast("bigint").alias("df")
+    )
+    joined = grams.join(dfs, "g")
+    return joined.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_gram_instances"),
+        F.sum(F.when(F.col("df") >= 3, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_boiler_instances"),
+        F.count_distinct(F.when(F.col("df") >= 3, F.col("g")))
+        .cast("bigint")
+        .alias("n_boiler_distinct"),
+        (
+            F.sum(F.when(F.col("df") >= 3, 1).otherwise(0)).cast("double")
+            / F.count(F.lit(1)).cast("double")
+        ).alias("boiler_ratio"),
+    )
+
+
+@register(
+    "text_smog_index",
+    tags=("text", "quality", "agg"),
+    oracle=f"""
+        WITH per_doc AS (
+            SELECT lang,
+                   CAST(len(list_filter(string_split(text, ' '),
+                        t -> t <> '')) AS BIGINT) AS w,
+                   CAST(GREATEST(1, len(regexp_extract_all(text,
+                        '[.!?]+'))) AS BIGINT) AS s,
+                   CAST(len(list_filter(string_split(text, ' '),
+                        t -> t <> '' AND
+                             len(regexp_extract_all(lower(t),
+                                 '[aeiouy]+')) >= 3)) AS BIGINT) AS poly
+            FROM documents
+        ),
+        scored AS (
+            SELECT lang, w, s, poly,
+                   CAST('1.043' AS DOUBLE)
+                   * sqrt(CAST(poly * 30 AS DOUBLE) / CAST(s AS DOUBLE))
+                   + CAST('3.1291' AS DOUBLE) AS smog
+            FROM per_doc WHERE w > 0
+        )
+        SELECT lang,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(poly) AS BIGINT) AS total_polysyllables,
+               {o_fsum('smog')}
+                 / CAST(COUNT(*) AS DOUBLE) AS mean_smog_grade
+        FROM scored
+        GROUP BY lang
+        ORDER BY lang
+    """,
+)
+def text_smog_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SMOG readability grade per language — the polysyllable-count
+    companion to text_readability_fk (SMOG tracks clinical/technical
+    density where FK tracks sentence length): grade = 1.043 *
+    sqrt(polysyllables * 30 / sentences) + 3.1291. Polysyllables are
+    words with >= 3 vowel-group runs (the FK syllable convention
+    applied per token), sentences the [.!?]+ runs floored at 1 — all
+    exact BIGINT counts. The per-doc grade is one double expression
+    with string-routed constants and an IEEE-correctly-rounded sqrt
+    over an integer ratio; the per-language mean rides the
+    floor-scale fsum so the reduction is order-free. One scan, one
+    k-language shuffle, all JVM-side."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    per_doc = d.select(
+        "lang",
+        F.size(
+            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+        )
+        .cast("bigint")
+        .alias("w"),
+        F.greatest(
+            F.lit(1),
+            F.size(F.regexp_extract_all(F.col("text"), F.lit("[.!?]+"), 0)),
+        )
+        .cast("bigint")
+        .alias("s"),
+        F.size(
+            F.filter(
+                F.split(F.col("text"), " "),
+                lambda t: (t != "")
+                & (
+                    F.size(
+                        F.regexp_extract_all(
+                            F.lower(t), F.lit("[aeiouy]+"), 0
+                        )
+                    )
+                    >= 3
+                ),
+            )
+        )
+        .cast("bigint")
+        .alias("poly"),
+    ).filter(F.col("w") > 0)
+    smog = F.lit(1.043) * F.sqrt(
+        (F.col("poly") * 30).cast("double") / F.col("s").cast("double")
+    ) + F.lit(3.1291)
+    return (
+        per_doc.select("lang", "poly", smog.alias("smog"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("poly").cast("bigint").alias("total_polysyllables"),
+            (
+                F.sum(
+                    F.floor(F.col("smog") * F.lit(1e6)).cast("decimal(38,0)")
+                )
+                .cast("string")
+                .cast("double")
+                / F.lit(1e6)
+                / F.count(F.lit(1)).cast("double")
+            ).alias("mean_smog_grade"),
+        )
+        .orderBy("lang")
+    )
+
+
+@register(
+    "text_ari_index",
+    tags=("text", "quality", "agg"),
+    oracle=f"""
+        WITH per_doc AS (
+            SELECT lang,
+                   CAST(len(list_filter(string_split(text, ' '),
+                        t -> t <> '')) AS BIGINT) AS w,
+                   CAST(GREATEST(1, len(regexp_extract_all(text,
+                        '[.!?]+'))) AS BIGINT) AS s,
+                   CAST(len(regexp_extract_all(text, '[A-Za-z0-9]'))
+                        AS BIGINT) AS ch
+            FROM documents
+        ),
+        scored AS (
+            SELECT lang, w, s, ch,
+                   CAST('4.71' AS DOUBLE)
+                       * (CAST(ch AS DOUBLE) / CAST(w AS DOUBLE))
+                   + CAST('0.5' AS DOUBLE)
+                       * (CAST(w AS DOUBLE) / CAST(s AS DOUBLE))
+                   - CAST('21.43' AS DOUBLE) AS ari
+            FROM per_doc WHERE w > 0
+        )
+        SELECT lang,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(ch) AS BIGINT) AS total_alnum_chars,
+               {o_fsum('ari')}
+                 / CAST(COUNT(*) AS DOUBLE) AS mean_ari_grade
+        FROM scored
+        GROUP BY lang
+        ORDER BY lang
+    """,
+)
+def text_ari_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Automated Readability Index per language — the character-level
+    third leg of the readability suite (FK: syllables, SMOG:
+    polysyllables, ARI: spelling length): grade = 4.71 * chars/words
+    + 0.5 * words/sentences - 21.43, with chars = alphanumeric count
+    (a single-char regex class, engine-agnostic). All counts exact
+    BIGINTs; the per-doc grade is one double expression with
+    string-routed constants; the per-language mean rides the
+    floor-scale fsum (order-free reduction). One scan, one k-language
+    shuffle, all JVM-side."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    per_doc = d.select(
+        "lang",
+        F.size(
+            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+        )
+        .cast("bigint")
+        .alias("w"),
+        F.greatest(
+            F.lit(1),
+            F.size(F.regexp_extract_all(F.col("text"), F.lit("[.!?]+"), 0)),
+        )
+        .cast("bigint")
+        .alias("s"),
+        F.size(
+            F.regexp_extract_all(F.col("text"), F.lit("[A-Za-z0-9]"), 0)
+        )
+        .cast("bigint")
+        .alias("ch"),
+    ).filter(F.col("w") > 0)
+    ari = (
+        F.lit(4.71) * (F.col("ch").cast("double") / F.col("w").cast("double"))
+        + F.lit(0.5) * (F.col("w").cast("double") / F.col("s").cast("double"))
+        - F.lit(21.43)
+    )
+    return (
+        per_doc.select("lang", "ch", ari.alias("ari"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("ch").cast("bigint").alias("total_alnum_chars"),
+            (fsum(F.col("ari")) / F.count(F.lit(1)).cast("double")).alias(
+                "mean_ari_grade"
+            ),
+        )
+        .orderBy("lang")
+    )
+
+
+@register(
+    "text_pmi_bigrams",
+    tags=("text", "collocation", "agg"),
+    oracle=f"""
+        WITH toks AS ({TOKENS_SQL}),
+        uni AS MATERIALIZED (
+            SELECT tok, CAST(COUNT(*) AS BIGINT) AS cx
+            FROM toks GROUP BY tok
+        ),
+        big AS (
+            SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS cxy
+            FROM (
+                SELECT doc_id, tok AS w1,
+                       LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos)
+                           AS w2
+                FROM toks
+            ) WHERE w2 IS NOT NULL
+            GROUP BY w1, w2
+        ),
+        tot AS (
+            SELECT CAST(SUM(cx) AS BIGINT) AS n_uni,
+                   (SELECT CAST(SUM(cxy) AS BIGINT) FROM big) AS n_bi
+            FROM uni
+        ),
+        scored AS (
+            SELECT b.w1, b.w2, b.cxy, u1.cx AS c1, u2.cx AS c2,
+                   CAST(ln(
+                       CAST(b.cxy AS DOUBLE) * CAST(t.n_uni AS DOUBLE)
+                       / CAST(t.n_bi AS DOUBLE)
+                       * (CAST(t.n_uni AS DOUBLE) / CAST(u1.cx AS DOUBLE))
+                       / CAST(u2.cx AS DOUBLE)
+                   ) AS DECIMAL(12,6)) AS pmi_q6
+            FROM big b
+            JOIN uni u1 ON u1.tok = b.w1
+            JOIN uni u2 ON u2.tok = b.w2
+            CROSS JOIN tot t
+            WHERE b.cxy >= 5
+        )
+        SELECT w1, w2, cxy, c1, c2,
+               CAST(CAST(pmi_q6 AS VARCHAR) AS DOUBLE) AS pmi
+        FROM scored
+        ORDER BY pmi_q6 DESC, w1, w2
+        LIMIT 20
+    """,
+)
+def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 adjacent-token collocations by pointwise mutual
+    information with a count floor of 5 — the classic collocation
+    extractor (PMI = ln(p(xy)/(p(x)p(y)))) every corpus-analysis and
+    phrase-mining pipeline runs before vocabulary decisions.
+    Exactness: all counts are exact BIGINTs; the probability ratio
+    assembles in ONE double expression with a pinned
+    multiply/divide order (identical operands -> identical double),
+    and the ln lands in the house quantized-ln DECIMAL(12,6) (the
+    text_ngram_entropy precedent) so BOTH the output value and the
+    top-20 sort key are engine-identical; ties at the cut break on
+    the (w1, w2) total order. Distributed shape: bigrams from a
+    per-doc LEAD window (documents are content-bounded), two
+    token-key hash aggs, two vocab-key equi-joins (no broadcast on
+    the corpus-scaled vocab), and the top-20 plans as
+    TakeOrderedAndProject — each partition surrenders 20 local
+    winners, never a global sort."""
+    d = load_table_parallel(spark, sf_dir, "documents")
+    # deliberately unpersisted: the split+explode is cheap to
+    # recompute per consumer; caching the exploded relation costs
+    # more than the extra scan (no-persist 0.96 s vs both-persisted
+    # 1.14 s min-of-3 at sf0.1 — the stat_moods_median finding)
+    toks = tokens(d)
+    uni = toks.groupBy("tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cx")
+    )
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    big = (
+        toks.select(
+            "doc_id",
+            F.col("tok").alias("w1"),
+            F.lead("tok").over(w_doc).alias("w2"),
+        )
+        .filter(F.col("w2").isNotNull())
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cxy"))
+    )
+    n_uni = uni.agg(F.sum("cx").cast("bigint").alias("n_uni"))
+    n_bi_rel = big.agg(F.sum("cxy").cast("bigint").alias("n_bi"))
+    u1 = uni.select(F.col("tok").alias("w1"), F.col("cx").alias("c1"))
+    u2 = uni.select(F.col("tok").alias("w2"), F.col("cx").alias("c2"))
+    scored = (
+        big.filter(F.col("cxy") >= 5)
+        .join(u1, "w1")
+        .join(u2, "w2")
+        .crossJoin(F.broadcast(n_uni))
+        .crossJoin(F.broadcast(n_bi_rel))
+        .select(
+            "w1",
+            "w2",
+            "cxy",
+            "c1",
+            "c2",
+            F.log(
+                F.col("cxy").cast("double")
+                * F.col("n_uni").cast("double")
+                / F.col("n_bi").cast("double")
+                * (
+                    F.col("n_uni").cast("double")
+                    / F.col("c1").cast("double")
+                )
+                / F.col("c2").cast("double")
+            )
+            .cast("decimal(12,6)")
+            .alias("pmi_q6"),
+        )
+    )
+    return (
+        scored.orderBy(F.col("pmi_q6").desc(), "w1", "w2")
+        .limit(20)
+        .select(
+            "w1",
+            "w2",
+            "cxy",
+            "c1",
+            "c2",
+            as_d(F.col("pmi_q6")).alias("pmi"),
+        )
+    )

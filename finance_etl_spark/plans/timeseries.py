@@ -17,21 +17,37 @@ from finance_etl_spark.functions.money import (
     dsum,
     lsum,
     o_dsum,
+    o_fsum,
     o_lsum,
     o_ordered_fold_sum,
+    ordered_fold_sum,
 )
 from finance_etl_spark.io.readers import load_table
 from finance_etl_spark.operators.joins import asof_join, range_join
 from finance_etl_spark.operators.sessionize import sessionize
 from finance_etl_spark.plans.recipes import (
+    ASOF_LAST_PURCHASE_SQL,
+    CLICKS_PURCHASES_CTE,
+    CUSUM_CHANGEPOINT_SQL,
+    DAILY_Q6_SQL,
     DAILY_SCALED_SQL,
     EVENT_DAILY_RN_SQL,
     EVENT_DAILY_SQL,
     EVENT_DAILY_XQ_SQL,
+    MKT_RET_SQL,
+    SEG_DAILY_SQL,
+    SEG_RET_SQL,
+    cusum_changepoint,
+    daily_q6,
     daily_scaled,
     event_daily,
     event_daily_rn,
     event_daily_xq,
+    mkt_returns,
+    o_ret_q9,
+    ret_q9,
+    seg_daily,
+    seg_returns,
 )
 from finance_etl_spark.plans.registry import register
 
@@ -48,14 +64,7 @@ def _events(spark, sf_dir, etype: str) -> DataFrame:
     "ts_asof_join",
     headline=True,
     tags=("join", "asof"),
-    oracle="""
-        WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-             purchases AS (SELECT user_id, ts, MAX(value) AS value
-                           FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts)
-        SELECT c.event_id, c.user_id, c.ts, p.value AS last_purchase_value
-        FROM clicks c ASOF LEFT JOIN purchases p
-          ON c.user_id = p.user_id AND c.ts >= p.ts
-    """,
+    oracle=ASOF_LAST_PURCHASE_SQL,
 )
 def ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join: each click gets the user's latest purchase
@@ -78,10 +87,7 @@ def ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_asof_tolerance",
     tags=("join", "asof"),
-    oracle="""
-        WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-             purchases AS (SELECT user_id, ts, MAX(value) AS value
-                           FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts)
+    oracle=f"""{CLICKS_PURCHASES_CTE}
         SELECT c.event_id, c.user_id, c.ts,
                CASE WHEN p.ts >= c.ts - INTERVAL 1 DAY THEN p.value END AS recent_purchase_value
         FROM clicks c ASOF LEFT JOIN purchases p
@@ -1506,10 +1512,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_asof_forward",
     tags=("join", "asof"),
-    oracle="""
-        WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-             purchases AS (SELECT user_id, ts, MAX(value) AS value
-                           FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts)
+    oracle=f"""{CLICKS_PURCHASES_CTE}
         SELECT c.event_id, c.user_id, c.ts, p.value AS next_purchase_value
         FROM clicks c ASOF LEFT JOIN purchases p
           ON c.user_id = p.user_id AND c.ts <= p.ts
@@ -4123,42 +4126,7 @@ def ts_viterbi_2state(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_cusum_changepoint",
     tags=("timeseries", "window", "stats"),
-    oracle=f"""
-        WITH daily AS (
-            {EVENT_DAILY_XQ_SQL}
-        ),
-        pre AS (
-            SELECT event_type, d, rn, xq,
-                   CAST(SUM(xq) OVER (PARTITION BY event_type ORDER BY rn
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix,
-                   CAST(SUM(xq) OVER (PARTITION BY event_type)
-                        AS BIGINT) AS s,
-                   CAST(COUNT(*) OVER (PARTITION BY event_type)
-                        AS BIGINT) AS n
-            FROM daily
-        ),
-        dev AS (
-            SELECT event_type, d, rn, prefix, s, n,
-                   abs(CAST(n AS DECIMAL(38,0)) * prefix
-                       - CAST(rn AS DECIMAL(38,0)) * s) AS dabs
-            FROM pre WHERE rn < n
-        ),
-        best AS (
-            SELECT event_type, d, rn, prefix, s, n, dabs,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                       ORDER BY dabs DESC, rn) AS pick
-            FROM dev
-        )
-        SELECT event_type, n, CAST(rn AS BIGINT) AS cp_index, d AS cp_date,
-               CAST(CAST(dabs AS VARCHAR) AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * 1e6) AS cusum_peak,
-               CAST(prefix AS DOUBLE) / (CAST(rn AS DOUBLE) * 1e6)
-                   AS mean_before,
-               CAST(s - prefix AS DOUBLE)
-                 / (CAST(n - rn AS DOUBLE) * 1e6) AS mean_after
-        FROM best WHERE pick = 1
-        ORDER BY event_type
-    """,
+    oracle=CUSUM_CHANGEPOINT_SQL,
 )
 def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM single-changepoint detection per daily series, EXACT: the
@@ -4171,50 +4139,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combining daily agg. This is the screening pass a
     monitoring pipeline runs before fitting anything heavier."""
     daily = event_daily_xq(spark, sf_dir)
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("rn")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("event_type")
-    pre = daily.select(
-        "event_type",
-        "d",
-        "rn",
-        F.sum("xq").over(wcum).cast("bigint").alias("prefix"),
-        F.sum("xq").over(wall).cast("bigint").alias("s"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
-    )
-    dev = pre.filter(F.col("rn") < F.col("n")).withColumn(
-        "dabs",
-        F.abs(
-            F.col("n").cast("decimal(38,0)") * F.col("prefix")
-            - F.col("rn").cast("decimal(38,0)") * F.col("s")
-        ),
-    )
-    wpick = Window.partitionBy("event_type").orderBy(
-        F.col("dabs").desc(), F.col("rn")
-    )
-    best = dev.withColumn("pick", F.row_number().over(wpick)).filter(
-        F.col("pick") == 1
-    )
-    return best.select(
-        "event_type",
-        "n",
-        F.col("rn").cast("bigint").alias("cp_index"),
-        F.col("d").alias("cp_date"),
-        (
-            F.col("dabs").cast("string").cast("double")
-            / (F.col("n").cast("double") * F.lit(1e6))
-        ).alias("cusum_peak"),
-        (
-            F.col("prefix").cast("double") / (F.col("rn").cast("double") * F.lit(1e6))
-        ).alias("mean_before"),
-        (
-            (F.col("s") - F.col("prefix")).cast("double")
-            / ((F.col("n") - F.col("rn")).cast("double") * F.lit(1e6))
-        ).alias("mean_after"),
-    ).orderBy("event_type")
+    return cusum_changepoint(daily)
 
 
 @register(
@@ -5656,4 +5581,1998 @@ def ts_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("attribution_share"),
         )
         .orderBy("channel")
+    )
+
+
+@register(
+    "ts_calendar_effects",
+    tags=("timeseries", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        dow AS (
+            SELECT segment, isodow(d) - 1 AS wd,
+                   CAST(COUNT(*) AS BIGINT) AS n_days,
+                   CAST(SUM(CAST(x AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
+                       AS cents
+            FROM daily GROUP BY 1, 2
+        ),
+        seg AS (
+            SELECT segment,
+                   CAST(SUM(n_days) AS BIGINT) AS n_all,
+                   CAST(SUM(cents) AS DECIMAL(38,0)) AS cents_all
+            FROM dow GROUP BY segment
+        )
+        SELECT dow.segment, CAST(dow.wd AS INT) AS weekday, dow.n_days,
+               CAST(CAST(dow.cents AS VARCHAR) AS DOUBLE)
+                 / dow.n_days / 100 AS avg_revenue,
+               (CAST(CAST(dow.cents AS VARCHAR) AS DOUBLE) / dow.n_days)
+                 / (CAST(CAST(seg.cents_all AS VARCHAR) AS DOUBLE)
+                    / seg.n_all) AS rel_effect
+        FROM dow JOIN seg ON seg.segment = dow.segment
+        ORDER BY dow.segment, weekday
+    """,
+)
+def ts_calendar_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-of-week calendar effect per segment: mean daily revenue by
+    ISO weekday relative to the segment's all-days mean — the
+    seasonality fingerprint behind staffing curves and anomaly
+    baselines (rel_effect 1.0 = no effect). Weekday uses the ISO
+    convention on BOTH engines (Spark weekday() == DuckDB isodow()-1
+    == 0 for Monday; the default dayofweek() functions disagree
+    across engines and are avoided). Revenue accumulates as exact
+    integer cents in DECIMAL(38,0); means divide out as doubles at
+    the edge via the VARCHAR route. One corpus agg, then a 35-row
+    relation."""
+    daily = seg_daily(spark, sf_dir)
+    dow = daily.groupBy(
+        "segment", F.weekday("d").alias("wd")
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        F.sum(F.col("x").cast("decimal(18,2)") * 100)
+        .cast("decimal(38,0)")
+        .alias("cents"),
+    )
+    seg = dow.groupBy("segment").agg(
+        F.sum("n_days").cast("bigint").alias("n_all"),
+        F.sum("cents").cast("decimal(38,0)").alias("cents_all"),
+    )
+    return (
+        dow.join(F.broadcast(seg), "segment")
+        .select(
+            "segment",
+            F.col("wd").cast("int").alias("weekday"),
+            "n_days",
+            (as_d(F.col("cents")) / F.col("n_days") / 100).alias(
+                "avg_revenue"
+            ),
+            (
+                (as_d(F.col("cents")) / F.col("n_days"))
+                / (as_d(F.col("cents_all")) / F.col("n_all"))
+            ).alias("rel_effect"),
+        )
+        .orderBy("segment", "weekday")
+    )
+
+
+@register(
+    "ts_wape_smape",
+    tags=("timeseries", "window", "ml-eval"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        fc AS (
+            SELECT segment, d,
+                   CAST(x AS DECIMAL(18,2)) AS y,
+                   LAG(x, 7) OVER (PARTITION BY segment ORDER BY d) AS yhat
+            FROM daily
+        ),
+        ev AS (
+            SELECT segment, y, yhat,
+                   CAST(ABS(CAST(y AS DECIMAL(18,2)) * 100
+                        - CAST(yhat AS DECIMAL(18,2)) * 100)
+                        AS DECIMAL(38,0)) AS abs_err_cents,
+                   2 * CAST(CAST(ABS(CAST(y AS DECIMAL(18,2)) * 100
+                            - CAST(yhat AS DECIMAL(18,2)) * 100)
+                            AS VARCHAR) AS DOUBLE)
+                     / (CAST(CAST(CAST(y AS DECIMAL(18,2)) * 100
+                             AS VARCHAR) AS DOUBLE)
+                        + CAST(CAST(CAST(yhat AS DECIMAL(18,2)) * 100
+                               AS VARCHAR) AS DOUBLE)) AS smape_term
+            FROM fc WHERE yhat IS NOT NULL
+        )
+        SELECT segment,
+               CAST(COUNT(*) AS BIGINT) AS n_eval,
+               CAST(CAST(SUM(abs_err_cents) AS VARCHAR) AS DOUBLE)
+                 / CAST(CAST(SUM(CAST(CAST(y AS DECIMAL(18,2)) * 100
+                        AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS wape,
+               {o_fsum('smape_term', 9)} / COUNT(*) AS smape
+        FROM ev GROUP BY segment
+        ORDER BY segment
+    """,
+)
+def ts_wape_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WAPE and sMAPE of the seasonal-naive forecast (same weekday
+    last week) per segment — the two workhorse forecast-accuracy
+    metrics that complement ts_forecast_backtest_mase's scaled error:
+    WAPE = sum|y - yhat| / sum|y| is an EXACT ratio of integer-cents
+    sums (revenue is positive, so no abs needed on the denominator);
+    sMAPE's per-row ratio 2|e|/(y + yhat) is IEEE-deterministic per
+    row and reduces through the floor-1e9 exact-decimal sum (o_fsum
+    recipe) so the engine summation order cannot matter. The lag-7
+    forecast is one per-segment calendar-bounded window; evaluation
+    rows are those with a 7-day-old same-weekday observation.
+    Denominator degeneracy (all-zero actuals) is impossible on this
+    fixture (positive prices, documented)."""
+    daily = seg_daily(spark, sf_dir)
+    w = Window.partitionBy("segment").orderBy("d")
+    fc = daily.select(
+        "segment",
+        "d",
+        F.col("x").alias("y"),
+        F.lag("x", 7).over(w).alias("yhat"),
+    ).filter(F.col("yhat").isNotNull())
+    y_c = (F.col("y").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
+    yh_c = (F.col("yhat").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
+    abs_err = F.abs(y_c - yh_c).cast("decimal(38,0)")
+    smape_term = 2 * as_d(abs_err) / (as_d(y_c) + as_d(yh_c))
+    ev = fc.select(
+        "segment",
+        y_c.alias("y_cents"),
+        abs_err.alias("abs_err_cents"),
+        smape_term.alias("smape_term"),
+    )
+    return (
+        ev.groupBy("segment")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_eval"),
+            (
+                as_d(F.sum("abs_err_cents").cast("decimal(38,0)"))
+                / as_d(F.sum("y_cents").cast("decimal(38,0)"))
+            ).alias("wape"),
+            (
+                as_d(
+                    F.sum(
+                        F.floor(F.col("smape_term") * F.lit(1e9)).cast(
+                            "decimal(38,0)"
+                        )
+                    ).cast("decimal(38,0)")
+                )
+                / F.lit(1e9)
+                / F.count(F.lit(1))
+            ).alias("smape"),
+        )
+        .orderBy("segment")
+    )
+
+
+@register(
+    "ts_dickey_fuller_stat",
+    tags=("timeseries", "stats", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        pairs AS (
+            SELECT segment,
+                   CAST(CAST(x AS DECIMAL(18,2)) * 100
+                        - CAST(xp AS DECIMAL(18,2)) * 100 AS BIGINT) AS dy,
+                   CAST(CAST(xp AS DECIMAL(18,2)) * 100 AS BIGINT) AS xl
+            FROM (SELECT segment, x,
+                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
+                  FROM daily)
+            WHERE xp IS NOT NULL
+        ),
+        s AS (
+            SELECT segment,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(xl) AS DECIMAL(38,0)) AS sx,
+                   CAST(SUM(dy) AS DECIMAL(38,0)) AS sy,
+                   CAST(SUM(CAST(xl AS DECIMAL(38,0)) * xl)
+                        AS DECIMAL(38,0)) AS sxx,
+                   CAST(SUM(CAST(xl AS DECIMAL(38,0)) * dy)
+                        AS DECIMAL(38,0)) AS sxy,
+                   CAST(SUM(CAST(dy AS DECIMAL(38,0)) * dy)
+                        AS DECIMAL(38,0)) AS syy
+            FROM pairs GROUP BY segment
+        )
+        SELECT segment, n,
+               (CAST(n AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
+                - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                  * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
+               / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
+                  - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                    * CAST(CAST(sx AS VARCHAR) AS DOUBLE)) AS beta,
+               CASE WHEN n > 2 THEN
+                 ((CAST(n AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
+                   - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                     * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
+                  / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
+                     - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                       * CAST(CAST(sx AS VARCHAR) AS DOUBLE)))
+                 / sqrt(
+                     ((CAST(CAST(syy AS VARCHAR) AS DOUBLE)
+                       - CAST(CAST(sy AS VARCHAR) AS DOUBLE)
+                         * CAST(CAST(sy AS VARCHAR) AS DOUBLE) / n)
+                      - ((CAST(n AS DOUBLE)
+                          * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
+                          - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                            * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
+                         / (CAST(n AS DOUBLE)
+                            * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
+                            - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                              * CAST(CAST(sx AS VARCHAR) AS DOUBLE)))
+                        * (CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
+                           - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                             * CAST(CAST(sy AS VARCHAR) AS DOUBLE) / n))
+                     / (n - 2)
+                     / (CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
+                        - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+                          * CAST(CAST(sx AS VARCHAR) AS DOUBLE) / n))
+               END AS df_stat
+        FROM s ORDER BY segment
+    """,
+)
+def ts_dickey_fuller_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dickey-Fuller unit-root statistic (constant, no augmentation)
+    per segment: regress the daily revenue CHANGE on the lagged level,
+    DF = beta_hat / se(beta_hat) — large negative values reject a unit
+    root (mean reversion), the stationarity screen that pairs with
+    ts_kpss_level's reversed null. Sufficient statistics are exact
+    DECIMAL(38,0) sums of integer cents (the CAPM/OLS recipe:
+    n*Sxy - Sx*Sy forms, VARCHAR-routed once); the slope and its
+    standard error se^2 = (SSE/(n-2)) / Sxx_centered come out in
+    closed form with no per-row doubles at all. Class-5: df_stat
+    NULLs for n <= 2; Sxx_centered > 0 holds on any series with two
+    distinct levels (fixture contract, all SFs)."""
+    daily = seg_daily(spark, sf_dir)
+    w = Window.partitionBy("segment").orderBy("d")
+    pairs = (
+        daily.withColumn("xp", F.lag("x").over(w))
+        .filter(F.col("xp").isNotNull())
+        .select(
+            "segment",
+            (
+                (F.col("x").cast("decimal(18,2)") * 100)
+                - (F.col("xp").cast("decimal(18,2)") * 100)
+            )
+            .cast("bigint")
+            .alias("dy"),
+            (F.col("xp").cast("decimal(18,2)") * 100)
+            .cast("bigint")
+            .alias("xl"),
+        )
+    )
+    s = pairs.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("xl").cast("decimal(38,0)").alias("sx"),
+        F.sum("dy").cast("decimal(38,0)").alias("sy"),
+        F.sum(F.col("xl").cast("decimal(38,0)") * F.col("xl"))
+        .cast("decimal(38,0)")
+        .alias("sxx"),
+        F.sum(F.col("xl").cast("decimal(38,0)") * F.col("dy"))
+        .cast("decimal(38,0)")
+        .alias("sxy"),
+        F.sum(F.col("dy").cast("decimal(38,0)") * F.col("dy"))
+        .cast("decimal(38,0)")
+        .alias("syy"),
+    )
+    n_d = F.col("n").cast("double")
+    sx, sy = as_d(F.col("sx")), as_d(F.col("sy"))
+    sxx, sxy, syy = (
+        as_d(F.col("sxx")),
+        as_d(F.col("sxy")),
+        as_d(F.col("syy")),
+    )
+    beta = (n_d * sxy - sx * sy) / (n_d * sxx - sx * sx)
+    sse = (syy - sy * sy / F.col("n")) - beta * (sxy - sx * sy / F.col("n"))
+    se2 = sse / (F.col("n") - 2) / (sxx - sx * sx / F.col("n"))
+    return s.select(
+        "segment",
+        "n",
+        beta.alias("beta"),
+        F.when(F.col("n") > 2, beta / F.sqrt(se2)).alias("df_stat"),
+    ).orderBy("segment")
+
+
+@register(
+    "ts_seasonal_strength",
+    tags=("timeseries", "stats", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        cents AS (
+            SELECT segment, isodow(d) - 1 AS wd,
+                   CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+            FROM daily
+        ),
+        dowm AS (
+            SELECT segment, wd,
+                   CAST(COUNT(*) AS BIGINT) AS n_wd,
+                   CAST(SUM(v) AS DECIMAL(38,0)) AS s_wd,
+                   CAST(SUM(CAST(v AS DECIMAL(38,0)) * v) AS DECIMAL(38,0))
+                       AS ss_wd
+            FROM cents GROUP BY 1, 2
+        ),
+        seg AS (
+            SELECT segment,
+                   CAST(SUM(n_wd) AS BIGINT) AS n,
+                   CAST(SUM(s_wd) AS DECIMAL(38,0)) AS s,
+                   CAST(SUM(ss_wd) AS DECIMAL(38,0)) AS ss,
+                   {o_ordered_fold_sum(
+                       'wd',
+                       'CAST(CAST(s_wd AS VARCHAR) AS DOUBLE) * CAST(CAST(s_wd AS'
+                       ' VARCHAR) AS DOUBLE) / n_wd',
+                   )} AS within_ms
+            FROM dowm GROUP BY segment
+        )
+        SELECT segment, n,
+               (CAST(CAST(ss AS VARCHAR) AS DOUBLE)
+                - CAST(CAST(s AS VARCHAR) AS DOUBLE)
+                  * CAST(CAST(s AS VARCHAR) AS DOUBLE) / n) / 1e4
+                   AS ss_total_dollars2,
+               (CAST(CAST(ss AS VARCHAR) AS DOUBLE) - within_ms) / 1e4
+                   AS ss_resid_dollars2,
+               CASE WHEN CAST(CAST(ss AS VARCHAR) AS DOUBLE)
+                         - CAST(CAST(s AS VARCHAR) AS DOUBLE)
+                           * CAST(CAST(s AS VARCHAR) AS DOUBLE) / n > 0 THEN
+                 GREATEST(CAST(0 AS DOUBLE),
+                   1 - (CAST(CAST(ss AS VARCHAR) AS DOUBLE) - within_ms)
+                     / (CAST(CAST(ss AS VARCHAR) AS DOUBLE)
+                        - CAST(CAST(s AS VARCHAR) AS DOUBLE)
+                          * CAST(CAST(s AS VARCHAR) AS DOUBLE) / n))
+               END AS seasonal_strength
+        FROM seg ORDER BY segment
+    """,
+)
+def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly seasonal strength per segment: F_s = max(0, 1 -
+    SS_resid/SS_total), where the seasonal fit is the per-weekday mean
+    — the one-number answer to "is this series weekly-seasonal enough
+    to model?" (the STL-strength heuristic of Wang-Hyndman-Smith,
+    computed against the weekday-means fit instead of a full STL).
+    Integer-cents sums and squares accumulate in DECIMAL(38,0); the
+    within-weekday mean squares sum_wd (S_wd^2 / n_wd) folds the <= 7
+    weekday terms in PINNED order, so both SS decompositions are
+    engine-identical; SS_resid = SS - sum_wd S_wd^2/n_wd is the
+    standard one-way-ANOVA identity (no per-row residual pass).
+    Output in dollars^2 (cents^2 / 1e4). Strength NULLs on a constant
+    series (SS_total = 0)."""
+    daily = seg_daily(spark, sf_dir)
+    cents = daily.select(
+        "segment",
+        F.weekday("d").alias("wd"),
+        (F.col("x").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+    )
+    dowm = cents.groupBy("segment", "wd").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_wd"),
+        F.sum("v").cast("decimal(38,0)").alias("s_wd"),
+        F.sum(F.col("v").cast("decimal(38,0)") * F.col("v"))
+        .cast("decimal(38,0)")
+        .alias("ss_wd"),
+    )
+    within_term = as_d(F.col("s_wd")) * as_d(F.col("s_wd")) / F.col("n_wd")
+    seg = dowm.groupBy("segment").agg(
+        F.sum("n_wd").cast("bigint").alias("n"),
+        F.sum("s_wd").cast("decimal(38,0)").alias("s"),
+        F.sum("ss_wd").cast("decimal(38,0)").alias("ss"),
+        ordered_fold_sum(F.col("wd"), within_term).alias("within_ms"),
+    )
+    ss_d = as_d(F.col("ss"))
+    s_d = as_d(F.col("s"))
+    ss_total = ss_d - s_d * s_d / F.col("n")
+    ss_resid = ss_d - F.col("within_ms")
+    return seg.select(
+        "segment",
+        "n",
+        (ss_total / F.lit(1e4)).alias("ss_total_dollars2"),
+        (ss_resid / F.lit(1e4)).alias("ss_resid_dollars2"),
+        F.when(
+            ss_total > 0,
+            F.greatest(F.lit(0.0), 1 - ss_resid / ss_total),
+        ).alias("seasonal_strength"),
+    ).orderBy("segment")
+
+
+@register(
+    "ts_intervention_step",
+    tags=("timeseries", "stats", "agg"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        cents AS (
+            SELECT segment,
+                   CASE WHEN d >= DATE '1995-06-01' THEN 1 ELSE 0 END AS post,
+                   CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+            FROM daily
+        ),
+        s AS (
+            SELECT segment,
+                   CAST(SUM(1 - post) AS BIGINT) AS n_pre,
+                   CAST(SUM(post) AS BIGINT) AS n_post,
+                   CAST(SUM((1 - post) * v) AS DECIMAL(38,0)) AS s_pre,
+                   CAST(SUM(post * v) AS DECIMAL(38,0)) AS s_post,
+                   CAST(SUM((1 - post) * CAST(v AS DECIMAL(38,0)) * v)
+                        AS DECIMAL(38,0)) AS ss_pre,
+                   CAST(SUM(post * CAST(v AS DECIMAL(38,0)) * v)
+                        AS DECIMAL(38,0)) AS ss_post
+            FROM cents GROUP BY segment
+        )
+        SELECT segment, n_pre, n_post,
+               CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre / 100
+                   AS pre_mean,
+               CAST(CAST(s_post AS VARCHAR) AS DOUBLE) / n_post / 100
+                   AS post_mean,
+               (CAST(CAST(s_post AS VARCHAR) AS DOUBLE) / n_post)
+                 / (CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre) - 1
+                   AS lift,
+               CASE WHEN n_pre > 1 AND n_post > 1 THEN
+                 (CAST(CAST(s_post AS VARCHAR) AS DOUBLE) / n_post
+                  - CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre)
+                 / sqrt(
+                     ((CAST(CAST(ss_pre AS VARCHAR) AS DOUBLE)
+                       - CAST(CAST(s_pre AS VARCHAR) AS DOUBLE)
+                         * CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre)
+                      / (n_pre - 1)) / n_pre
+                     + ((CAST(CAST(ss_post AS VARCHAR) AS DOUBLE)
+                         - CAST(CAST(s_post AS VARCHAR) AS DOUBLE)
+                           * CAST(CAST(s_post AS VARCHAR) AS DOUBLE)
+                           / n_post)
+                        / (n_post - 1)) / n_post)
+               END AS welch_t
+        FROM s ORDER BY segment
+    """,
+)
+def ts_intervention_step(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Intervention (step-change) analysis per segment at the fixed
+    1995-06-01 cut: pre/post level means, relative lift, and the
+    Welch t for the level shift — the before/after scorecard of every
+    launch and pricing change, on the daily revenue series. Exact
+    integer-cents sufficient statistics per arm in one grouped agg
+    (conditional sums — no second scan, no join); means/variances
+    divide out at the double edge via the VARCHAR route. Welch (not
+    pooled) because an intervention that shifts the level usually
+    shifts the variance too. t NULLs when either arm has < 2 days
+    (class-5 guard, identical both engines)."""
+    daily = seg_daily(spark, sf_dir)
+    cents = daily.select(
+        "segment",
+        F.when(F.col("d") >= F.lit("1995-06-01").cast("date"), 1)
+        .otherwise(0)
+        .alias("post"),
+        (F.col("x").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+    )
+    vD = F.col("v").cast("decimal(38,0)")
+    s = cents.groupBy("segment").agg(
+        F.sum(1 - F.col("post")).cast("bigint").alias("n_pre"),
+        F.sum("post").cast("bigint").alias("n_post"),
+        F.sum((1 - F.col("post")) * F.col("v"))
+        .cast("decimal(38,0)")
+        .alias("s_pre"),
+        F.sum(F.col("post") * F.col("v"))
+        .cast("decimal(38,0)")
+        .alias("s_post"),
+        F.sum((1 - F.col("post")) * vD * F.col("v"))
+        .cast("decimal(38,0)")
+        .alias("ss_pre"),
+        F.sum(F.col("post") * vD * F.col("v"))
+        .cast("decimal(38,0)")
+        .alias("ss_post"),
+    )
+    pre_m = as_d(F.col("s_pre")) / F.col("n_pre")
+    post_m = as_d(F.col("s_post")) / F.col("n_post")
+    var_pre = (
+        as_d(F.col("ss_pre"))
+        - as_d(F.col("s_pre")) * as_d(F.col("s_pre")) / F.col("n_pre")
+    ) / (F.col("n_pre") - 1)
+    var_post = (
+        as_d(F.col("ss_post"))
+        - as_d(F.col("s_post")) * as_d(F.col("s_post")) / F.col("n_post")
+    ) / (F.col("n_post") - 1)
+    return s.select(
+        "segment",
+        "n_pre",
+        "n_post",
+        (pre_m / 100).alias("pre_mean"),
+        (post_m / 100).alias("post_mean"),
+        (post_m / pre_m - 1).alias("lift"),
+        F.when(
+            (F.col("n_pre") > 1) & (F.col("n_post") > 1),
+            (post_m - pre_m)
+            / F.sqrt(var_pre / F.col("n_pre") + var_post / F.col("n_post")),
+        ).alias("welch_t"),
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# ts_cross_correlation — lead/lag CCF between two return series
+
+_CCF_RET_SQL = f"""
+            SELECT segment, d,
+                   {o_ret_q9('x', 'xp')} AS r
+            FROM (SELECT segment, d, x,
+                         LAG(x) OVER (PARTITION BY segment ORDER BY d) AS xp
+                  FROM daily
+                  WHERE segment IN ('BUILDING', 'MACHINERY'))
+            WHERE xp IS NOT NULL
+"""
+
+
+@register(
+    "ts_cross_correlation",
+    tags=("timeseries", "window", "stats"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        rets AS ({_CCF_RET_SQL}),
+        lags AS (SELECT unnest(range(0, 8)) AS lag),
+        j AS (
+            SELECT l.lag, b.r AS rb, m.r AS rm
+            FROM lags l
+            JOIN (SELECT d, r FROM rets WHERE segment = 'BUILDING') b ON TRUE
+            JOIN (SELECT d, r FROM rets WHERE segment = 'MACHINERY') m
+              ON m.d = b.d - CAST(l.lag AS INTEGER)
+        ),
+        s AS (
+            SELECT lag, CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(rb) AS BIGINT) AS sb,
+                   CAST(SUM(rm) AS BIGINT) AS sm,
+                   CAST(CAST(SUM(CAST(rb AS DECIMAL(19,0)) * rb) AS VARCHAR)
+                        AS DOUBLE) AS sbb,
+                   CAST(CAST(SUM(CAST(rm AS DECIMAL(19,0)) * rm) AS VARCHAR)
+                        AS DOUBLE) AS smm,
+                   CAST(CAST(SUM(CAST(rb AS DECIMAL(19,0)) * rm) AS VARCHAR)
+                        AS DOUBLE) AS sbm
+            FROM j GROUP BY lag
+        )
+        SELECT CAST(lag AS BIGINT) AS lag, n AS n_pairs,
+               CASE WHEN CAST(n AS DOUBLE) * sbb
+                           - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) > 0
+                     AND CAST(n AS DOUBLE) * smm
+                           - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) > 0 THEN
+                 (CAST(n AS DOUBLE) * sbm
+                  - CAST(sb AS DOUBLE) * CAST(sm AS DOUBLE))
+                 / (sqrt(CAST(n AS DOUBLE) * sbb
+                         - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))
+                    * sqrt(CAST(n AS DOUBLE) * smm
+                           - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE)))
+               END AS ccf
+        FROM s ORDER BY lag
+    """,
+)
+def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-correlation function between the BUILDING and MACHINERY
+    daily revenue return series at lags 0..7: does one segment's shock
+    show up in the other a few days later? CCF(l) = corr(r_b(d),
+    r_m(d-l)) — returns floor-quantize to q9 BIGINTs off exact decimal
+    daily sums (the fin_capm_beta recipe), each lag's five sufficient
+    sums are exact integer/DECIMAL arithmetic via a computed-key
+    equi-join (b.d - l = m.d; never a non-equi range join), and the
+    correlation assembles in one guarded double expression per lag
+    (degenerate variance NULLs it identically on both engines).
+    Scale: the lag grid is a broadcast 8-row relation crossed with the
+    calendar-bounded return series — corpus work is only the shared
+    daily agg."""
+    daily = seg_daily(spark, sf_dir).persist()
+    ws = Window.partitionBy("segment").orderBy("d")
+    rets = (
+        daily.filter(F.col("segment").isin("BUILDING", "MACHINERY"))
+        .withColumn("xp", F.lag("x").over(ws))
+        .filter(F.col("xp").isNotNull())
+        .select(
+            "segment",
+            "d",
+            ret_q9(F.col("x"), F.col("xp")).alias("r"),
+        )
+    )
+    b = rets.filter(F.col("segment") == "BUILDING").select(
+        "d", F.col("r").alias("rb")
+    )
+    m = rets.filter(F.col("segment") == "MACHINERY").select(
+        F.col("d").alias("dm"), F.col("r").alias("rm")
+    )
+    lags = spark.range(0, 8).select(F.col("id").cast("int").alias("lag"))
+    j = (
+        b.crossJoin(F.broadcast(lags))
+        .withColumn("dkey", F.date_sub(F.col("d"), F.col("lag")))
+        .join(F.broadcast(m), F.col("dkey") == F.col("dm"))
+    )
+    s = j.groupBy("lag").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("rb").cast("bigint").alias("sb"),
+        F.sum("rm").cast("bigint").alias("sm"),
+        as_d(F.sum(F.col("rb").cast("decimal(19,0)") * F.col("rb"))).alias("sbb"),
+        as_d(F.sum(F.col("rm").cast("decimal(19,0)") * F.col("rm"))).alias("smm"),
+        as_d(F.sum(F.col("rb").cast("decimal(19,0)") * F.col("rm"))).alias("sbm"),
+    )
+    n_d = F.col("n").cast("double")
+    sb_d = F.col("sb").cast("double")
+    sm_d = F.col("sm").cast("double")
+    var_b = n_d * F.col("sbb") - sb_d * sb_d
+    var_m = n_d * F.col("smm") - sm_d * sm_d
+    return s.select(
+        F.col("lag").cast("bigint").alias("lag"),
+        F.col("n").alias("n_pairs"),
+        F.when(
+            (var_b > 0) & (var_m > 0),
+            (n_d * F.col("sbm") - sb_d * sm_d)
+            / (F.sqrt(var_b) * F.sqrt(var_m)),
+        ).alias("ccf"),
+    ).orderBy("lag")
+
+
+# ---------------------------------------------------------------------------
+# ts_variance_ratio — Lo-MacKinlay random-walk diagnostic
+
+
+@register(
+    "ts_variance_ratio",
+    tags=("timeseries", "window", "stats"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        seq AS (
+            SELECT m,
+                   ROW_NUMBER() OVER (ORDER BY d) AS t,
+                   SUM(m) OVER (ORDER BY d
+                       ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS y2,
+                   SUM(m) OVER (ORDER BY d
+                       ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS y4,
+                   SUM(m) OVER (ORDER BY d
+                       ROWS BETWEEN 7 PRECEDING AND CURRENT ROW) AS y8
+            FROM rm
+        ),
+        base AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n1,
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS s1,
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
+                        AS DOUBLE) AS s2
+            FROM seq
+        ),
+        qs AS (
+            SELECT 2 AS q, CAST(COUNT(*) AS BIGINT) AS nq,
+                   CAST(CAST(SUM(CAST(y2 AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(CAST(y2 AS DECIMAL(19,0)) * y2) AS VARCHAR)
+                        AS DOUBLE) AS sy2
+            FROM seq WHERE t >= 2
+            UNION ALL
+            SELECT 4, CAST(COUNT(*) AS BIGINT),
+                   CAST(CAST(SUM(CAST(y4 AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE),
+                   CAST(CAST(SUM(CAST(y4 AS DECIMAL(19,0)) * y4) AS VARCHAR)
+                        AS DOUBLE)
+            FROM seq WHERE t >= 4
+            UNION ALL
+            SELECT 8, CAST(COUNT(*) AS BIGINT),
+                   CAST(CAST(SUM(CAST(y8 AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE),
+                   CAST(CAST(SUM(CAST(y8 AS DECIMAL(19,0)) * y8) AS VARCHAR)
+                        AS DOUBLE)
+            FROM seq WHERE t >= 8
+        )
+        SELECT CAST(q AS INT) AS q, nq AS n_periods,
+               CASE WHEN n1 > 1 AND nq > 1
+                         AND (CAST(n1 AS DOUBLE) * s2 - s1 * s1) > 0 THEN
+                 ((CAST(nq AS DOUBLE) * sy2 - sy * sy)
+                  * (CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) - 1)))
+                 / ((CAST(q AS DOUBLE)
+                     * (CAST(nq AS DOUBLE) * (CAST(nq AS DOUBLE) - 1)))
+                    * (CAST(n1 AS DOUBLE) * s2 - s1 * s1))
+               END AS vr
+        FROM qs CROSS JOIN base
+        ORDER BY q
+    """,
+)
+def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lo-MacKinlay variance ratio VR(q) for q = 2, 4, 8 on the
+    whole-market daily revenue return: Var(q-period overlapping sums) /
+    (q * Var(1-period)) — ~1 under a random walk, <1 under mean
+    reversion, >1 under trending (Lo & MacKinlay 1988; plain ratio of
+    unbiased sample variances, no heteroskedasticity correction —
+    convention pinned and matched by the reference test). Exactness:
+    returns are the shared q9-quantized integers; the overlapping
+    q-sums are integer window sums over the calendar-bounded series;
+    all four power sums accumulate in DECIMAL and cross to double once
+    via VARCHAR; each VR is ONE fixed-parenthesization double
+    expression. Degenerate zero variance NULLs identically. Scale:
+    corpus work is the shared daily agg; everything downstream rides
+    the O(days) return relation."""
+    rm = mkt_returns(seg_daily(spark, sf_dir))
+    wt = Window.orderBy("d")  # calendar-bounded
+    seq = rm.select(
+        "m",
+        F.row_number().over(wt).alias("t"),
+        F.sum("m").over(wt.rowsBetween(-1, 0)).alias("y2"),
+        F.sum("m").over(wt.rowsBetween(-3, 0)).alias("y4"),
+        F.sum("m").over(wt.rowsBetween(-7, 0)).alias("y8"),
+    )
+    base = seq.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n1"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
+        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("s2"),
+    )
+    parts = []
+    for q, ycol in ((2, "y2"), (4, "y4"), (8, "y8")):
+        parts.append(
+            seq.filter(F.col("t") >= q).agg(
+                F.lit(q).alias("q"),
+                F.count(F.lit(1)).cast("bigint").alias("nq"),
+                as_d(F.sum(F.col(ycol).cast("decimal(19,0)"))).alias("sy"),
+                as_d(
+                    F.sum(F.col(ycol).cast("decimal(19,0)") * F.col(ycol))
+                ).alias("sy2"),
+            )
+        )
+    qs = parts[0].unionByName(parts[1]).unionByName(parts[2])
+    n1_d = F.col("n1").cast("double")
+    nq_d = F.col("nq").cast("double")
+    q_d = F.col("q").cast("double")
+    var1_num = n1_d * F.col("s2") - F.col("s1") * F.col("s1")
+    return (
+        qs.crossJoin(F.broadcast(base))
+        .select(
+            F.col("q").cast("int").alias("q"),
+            F.col("nq").alias("n_periods"),
+            F.when(
+                (F.col("n1") > 1) & (F.col("nq") > 1) & (var1_num > 0),
+                (
+                    (nq_d * F.col("sy2") - F.col("sy") * F.col("sy"))
+                    * (n1_d * (n1_d - 1))
+                )
+                / ((q_d * (nq_d * (nq_d - 1))) * var1_num),
+            ).alias("vr"),
+        )
+        .orderBy("q")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_ewma_volatility — RiskMetrics decay-weighted vol per segment
+
+
+_EWMA_LAMBDA = 0.94
+
+
+_EWMA_K = 20
+
+
+_EWMA_WEIGHTS = [
+    (1.0 - _EWMA_LAMBDA) * _EWMA_LAMBDA**k for k in range(_EWMA_K)
+]
+
+
+_EWMA_W_SQL = ", ".join(
+    f"({k}, CAST('{w!r}' AS DOUBLE))" for k, w in enumerate(_EWMA_WEIGHTS)
+)
+
+
+@register(
+    "ts_ewma_volatility",
+    tags=("timeseries", "window", "finance"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        {SEG_RET_SQL},
+        tail AS (
+            SELECT segment, r,
+                   ROW_NUMBER() OVER (PARTITION BY segment ORDER BY d DESC)
+                       - 1 AS k,
+                   COUNT(*) OVER (PARTITION BY segment) AS n_all
+            FROM rs
+        ),
+        wts (k, w) AS (VALUES {_EWMA_W_SQL}),
+        terms AS (
+            SELECT t.segment, t.n_all, t.k,
+                   w.w * CAST(CAST(CAST(t.r AS DECIMAL(19,0)) * t.r
+                                   AS VARCHAR) AS DOUBLE) AS term
+            FROM tail t JOIN wts w ON w.k = t.k
+            WHERE t.k < {_EWMA_K} AND t.n_all >= {_EWMA_K}
+        ),
+        folded AS (
+            SELECT segment, CAST(MAX(n_all) AS BIGINT) AS n_days,
+                   list_reduce(list(term ORDER BY k),
+                               (acc, x) -> acc + x) AS var_q18
+            FROM terms GROUP BY segment
+        )
+        SELECT segment, n_days,
+               var_q18 / CAST(1e18 AS DOUBLE) AS ewma_var,
+               sqrt(var_q18 / CAST(1e18 AS DOUBLE)) AS ewma_vol
+        FROM folded ORDER BY segment
+    """,
+)
+def ts_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RiskMetrics EWMA volatility per segment: sigma^2 = (1-lambda) *
+    sum_k lambda^k r_{t-k}^2 over the last K=20 daily returns with
+    lambda = 0.94 (J.P. Morgan RiskMetrics 1996), truncated — the
+    finite-window form every intraday risk feed actually computes.
+    Exactness: the 20 decay weights are EXACT double literals computed
+    once in Python and string-routed into BOTH engines; r^2 is an
+    exact DECIMAL product crossing to double once per row; the 20-term
+    weighted sum is an ORDER-PINNED fold by lag k (sorted collect_list
+    fold vs ordered list_reduce), and the q18 de-scaling + sqrt are
+    single deterministic expressions. Segments with fewer than K
+    returns are excluded on both engines (none at shipped SFs — the
+    reference test asserts all 5 present). Scale: corpus work is the
+    shared daily agg; the tail ranking partitions by segment over the
+    calendar-bounded return relation."""
+    daily = seg_daily(spark, sf_dir)
+    rs = seg_returns(daily)
+    wdesc = Window.partitionBy("segment").orderBy(F.col("d").desc())
+    wall = Window.partitionBy("segment")
+    tail = rs.select(
+        "segment",
+        "r",
+        (F.row_number().over(wdesc) - 1).alias("k"),
+        F.count(F.lit(1)).over(wall).alias("n_all"),
+    ).filter((F.col("k") < _EWMA_K) & (F.col("n_all") >= _EWMA_K))
+    wts = F.array(
+        *[F.expr(f"CAST('{w!r}' AS DOUBLE)") for w in _EWMA_WEIGHTS]
+    )
+    terms = tail.select(
+        "segment",
+        "n_all",
+        "k",
+        (
+            wts[F.col("k")]
+            * as_d(F.col("r").cast("decimal(19,0)") * F.col("r"))
+        ).alias("term"),
+    )
+    folded = terms.groupBy("segment").agg(
+        F.max("n_all").cast("bigint").alias("n_days"),
+        ordered_fold_sum(F.col("k"), F.col("term")).alias("var_q18"),
+    )
+    v = F.col("var_q18") / F.expr("CAST(1e18 AS DOUBLE)")
+    return folded.select(
+        "segment", "n_days", v.alias("ewma_var"), F.sqrt(v).alias("ewma_vol")
+    ).orderBy("segment")
+
+
+# ---------------------------------------------------------------------------
+# ts_arch_lm_screen — Ljung-Box on squared returns (ARCH effect)
+
+
+@register(
+    "ts_arch_lm_screen",
+    tags=("timeseries", "stats", "finance"),
+    oracle=f"""
+        WITH daily AS ({SEG_DAILY_SQL}),
+        {MKT_RET_SQL},
+        z AS (
+            SELECT d,
+                   CAST(FLOOR(CAST(m AS DOUBLE) / CAST(1e3 AS DOUBLE))
+                        AS BIGINT) AS v
+            FROM rm
+        ),
+        zz AS (SELECT d, v * v AS q FROM z),
+        nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM zz),
+        lag_suff AS (
+            SELECT lg.k,
+                   CAST(COUNT(*) AS BIGINT) AS nk,
+                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(CAST(b.q AS DECIMAL(19,0))) AS VARCHAR)
+                        AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0)) * b.q) AS VARCHAR)
+                        AS DOUBLE) AS sxy,
+                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0)) * a.q) AS VARCHAR)
+                        AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(CAST(b.q AS DECIMAL(19,0)) * b.q) AS VARCHAR)
+                        AS DOUBLE) AS syy
+            FROM (VALUES (1), (2), (3), (4)) lg(k)
+            JOIN zz a ON TRUE
+            JOIN zz b ON b.d = a.d - to_days(lg.k)
+            GROUP BY lg.k
+        ),
+        rs2 AS (
+            SELECT k, nk,
+                   CASE WHEN (CAST(nk AS DOUBLE) * sxx - sx * sx) > 0
+                             AND (CAST(nk AS DOUBLE) * syy - sy * sy) > 0 THEN
+                     (CAST(nk AS DOUBLE) * sxy - sx * sy)
+                     / (sqrt(CAST(nk AS DOUBLE) * sxx - sx * sx)
+                        * sqrt(CAST(nk AS DOUBLE) * syy - sy * sy))
+                   END AS r
+            FROM lag_suff
+        ),
+        wide AS (
+            SELECT MAX(CASE WHEN k = 1 THEN r END) AS r1,
+                   MAX(CASE WHEN k = 2 THEN r END) AS r2,
+                   MAX(CASE WHEN k = 3 THEN r END) AS r3,
+                   MAX(CASE WHEN k = 4 THEN r END) AS r4
+            FROM rs2
+        )
+        SELECT nn.n, wide.r1, wide.r2, wide.r3, wide.r4,
+               CASE WHEN wide.r1 IS NOT NULL AND wide.r2 IS NOT NULL
+                         AND wide.r3 IS NOT NULL AND wide.r4 IS NOT NULL
+                         AND nn.n > 4 THEN
+                 CAST(nn.n AS DOUBLE) * (CAST(nn.n AS DOUBLE) + 2)
+                 * (wide.r1 * wide.r1 / (CAST(nn.n AS DOUBLE) - 1)
+                    + wide.r2 * wide.r2 / (CAST(nn.n AS DOUBLE) - 2)
+                    + wide.r3 * wide.r3 / (CAST(nn.n AS DOUBLE) - 3)
+                    + wide.r4 * wide.r4 / (CAST(nn.n AS DOUBLE) - 4))
+               END AS lb_stat
+        FROM nn CROSS JOIN wide
+    """,
+)
+def ts_arch_lm_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ARCH-effect screen: Ljung-Box portmanteau on SQUARED market
+    returns at lags 1-4 — volatility clustering shows up as
+    autocorrelation of squares even when returns themselves are white
+    (Engle 1982's LM test in its practitioners' portmanteau form;
+    ts_ljung_box covers the level series, this covers the second
+    moment). Returns are q6-quantized so z = v^2 is an exact BIGINT;
+    per-lag sufficient sums use the ts_cross_correlation recipe
+    (computed-key calendar equi-join b.d = a.d - k days — missing
+    calendar days drop pairs on both engines identically); each lag
+    correlation is one guarded fixed expression, and the LB statistic
+    is ONE expression with a static 4-term sum (fixed source order,
+    no fold needed). Degenerate zero-variance lags NULL the statistic
+    identically. Corpus work is the shared daily agg; the 4-lag join
+    rides the calendar-bounded return relation x a broadcast 4-row
+    spine."""
+    rm = mkt_returns(seg_daily(spark, sf_dir))
+    zz = rm.select(
+        "d",
+        (
+            F.floor(F.col("m").cast("double") / F.expr("CAST(1e3 AS DOUBLE)"))
+            .cast("bigint")
+        ).alias("v"),
+    ).select("d", (F.col("v") * F.col("v")).alias("q"))
+    nn = zz.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    lags = zz.sparkSession.createDataFrame([(1,), (2,), (3,), (4,)], "k int")
+    a = zz.select(F.col("d").alias("da"), F.col("q").alias("qa"))
+    b = zz.select(F.col("d").alias("db"), F.col("q").alias("qb"))
+    pairs = (
+        a.crossJoin(F.broadcast(lags))
+        .join(
+            b,
+            F.col("db") == F.date_sub(F.col("da"), F.col("k")),
+        )
+    )
+    qa_dec = F.col("qa").cast("decimal(19,0)")
+    qb_dec = F.col("qb").cast("decimal(19,0)")
+    suff = pairs.groupBy("k").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nk"),
+        as_d(F.sum(qa_dec)).alias("sx"),
+        as_d(F.sum(qb_dec)).alias("sy"),
+        as_d(F.sum(qa_dec * F.col("qb"))).alias("sxy"),
+        as_d(F.sum(qa_dec * F.col("qa"))).alias("sxx"),
+        as_d(F.sum(qb_dec * F.col("qb"))).alias("syy"),
+    )
+    nk_d = F.col("nk").cast("double")
+    vx = nk_d * F.col("sxx") - F.col("sx") * F.col("sx")
+    vy = nk_d * F.col("syy") - F.col("sy") * F.col("sy")
+    rs2 = suff.select(
+        "k",
+        F.when(
+            (vx > 0) & (vy > 0),
+            (nk_d * F.col("sxy") - F.col("sx") * F.col("sy"))
+            / (F.sqrt(vx) * F.sqrt(vy)),
+        ).alias("r"),
+    )
+    wide = rs2.agg(
+        *[
+            F.max(F.when(F.col("k") == k, F.col("r"))).alias(f"r{k}")
+            for k in (1, 2, 3, 4)
+        ]
+    )
+    n_d = F.col("n").cast("double")
+    lb = (
+        n_d
+        * (n_d + 2)
+        * (
+            F.col("r1") * F.col("r1") / (n_d - 1)
+            + F.col("r2") * F.col("r2") / (n_d - 2)
+            + F.col("r3") * F.col("r3") / (n_d - 3)
+            + F.col("r4") * F.col("r4") / (n_d - 4)
+        )
+    )
+    return (
+        nn.crossJoin(F.broadcast(wide))
+        .select(
+            "n",
+            "r1",
+            "r2",
+            "r3",
+            "r4",
+            F.when(
+                F.col("r1").isNotNull()
+                & F.col("r2").isNotNull()
+                & F.col("r3").isNotNull()
+                & F.col("r4").isNotNull()
+                & (F.col("n") > 4),
+                lb,
+            ).alias("lb_stat"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_theil_u2 — relative forecast accuracy of the seasonal-naive
+# forecast vs the naive no-change forecast
+
+
+@register(
+    "ts_theil_u2",
+    tags=("timeseries", "window", "agg"),
+    oracle=f"""
+        WITH daily AS (
+            {EVENT_DAILY_RN_SQL}
+        ),
+        lagged AS (
+            SELECT event_type, rn,
+                   CAST(CAST(x AS VARCHAR) AS DOUBLE) AS xd,
+                   CAST(CAST(LAG(x, 1) OVER w AS VARCHAR) AS DOUBLE) AS l1,
+                   CAST(CAST(LAG(x, 7) OVER w AS VARCHAR) AS DOUBLE) AS l7
+            FROM daily
+            WINDOW w AS (PARTITION BY event_type ORDER BY rn)
+        ),
+        terms AS (
+            SELECT event_type, rn,
+                   ((l7 - xd) / l1) * ((l7 - xd) / l1) AS num_t,
+                   ((xd - l1) / l1) * ((xd - l1) / l1) AS den_t
+            FROM lagged WHERE rn >= 8 AND l1 <> 0
+        )
+        SELECT event_type,
+               CAST(COUNT(*) AS BIGINT) AS n_terms,
+               CASE WHEN {o_ordered_fold_sum('rn', 'den_t')} > 0 THEN
+                 sqrt({o_ordered_fold_sum('rn', 'num_t')})
+                 / sqrt({o_ordered_fold_sum('rn', 'den_t')})
+               END AS theil_u2
+        FROM terms GROUP BY event_type ORDER BY event_type
+    """,
+)
+def ts_theil_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil's U2 per daily event series: the RMS of seasonal-naive
+    (lag-7) forecast errors relative to the RMS of naive no-change
+    (lag-1) errors, both scaled by the previous level — U2 < 1 means
+    the weekly-seasonal forecast genuinely beats "tomorrow = today",
+    the first question asked of any forecasting pipeline (Theil 1966).
+    Exactness: the daily levels are exact DECIMAL(18,6) sums crossing
+    to double once via VARCHAR; each term is one fixed-shape double
+    expression per row; the two sums fold in PINNED rn order
+    (F.aggregate over array_sort vs list_reduce ORDER BY rn); the
+    ratio-of-sqrts is one guarded expression. Corpus work: one
+    map-side-combining daily agg; windows run over the 30-row series
+    per type."""
+    daily = event_daily_rn(spark, sf_dir)
+    w = Window.partitionBy("event_type").orderBy("rn")
+    lagged = daily.select(
+        "event_type",
+        "rn",
+        as_d(F.col("x")).alias("xd"),
+        as_d(F.lag("x", 1).over(w)).alias("l1"),
+        as_d(F.lag("x", 7).over(w)).alias("l7"),
+    )
+    terms = lagged.filter((F.col("rn") >= 8) & (F.col("l1") != 0)).select(
+        "event_type",
+        "rn",
+        (
+            ((F.col("l7") - F.col("xd")) / F.col("l1"))
+            * ((F.col("l7") - F.col("xd")) / F.col("l1"))
+        ).alias("num_t"),
+        (
+            ((F.col("xd") - F.col("l1")) / F.col("l1"))
+            * ((F.col("xd") - F.col("l1")) / F.col("l1"))
+        ).alias("den_t"),
+    )
+    agg = terms.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_terms"),
+        ordered_fold_sum(F.col("rn"), F.col("num_t")).alias("num_s"),
+        ordered_fold_sum(F.col("rn"), F.col("den_t")).alias("den_s"),
+    )
+    return (
+        agg.select(
+            "event_type",
+            "n_terms",
+            F.when(
+                F.col("den_s") > 0,
+                F.sqrt(F.col("num_s")) / F.sqrt(F.col("den_s")),
+            ).alias("theil_u2"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_stochastic_oscillator — rolling %K / %D momentum census
+
+
+@register(
+    "ts_stochastic_oscillator",
+    tags=("timeseries", "window", "agg"),
+    oracle=f"""
+        WITH daily AS (
+            {EVENT_DAILY_RN_SQL}
+        ),
+        roll AS (
+            SELECT event_type, rn,
+                   CAST(CAST(x AS VARCHAR) AS DOUBLE) AS xd,
+                   CAST(COUNT(*) OVER w AS BIGINT) AS wn,
+                   CAST(CAST(MIN(x) OVER w AS VARCHAR) AS DOUBLE) AS lo,
+                   CAST(CAST(MAX(x) OVER w AS VARCHAR) AS DOUBLE) AS hi
+            FROM daily
+            WINDOW w AS (PARTITION BY event_type ORDER BY rn
+                         ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
+        ),
+        k AS (
+            SELECT event_type, rn,
+                   CASE WHEN hi > lo THEN (xd - lo) / (hi - lo) END AS pk
+            FROM roll WHERE wn = 14
+        ),
+        kd AS (
+            SELECT event_type, rn, pk,
+                   LAG(pk, 1) OVER w AS k1, LAG(pk, 2) OVER w AS k2
+            FROM k
+            WINDOW w AS (PARTITION BY event_type ORDER BY rn)
+        )
+        SELECT event_type,
+               CAST(COUNT(*) AS BIGINT) AS n_days,
+               CAST(SUM(CASE WHEN pk > CAST('0.8' AS DOUBLE)
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_overbought,
+               CAST(SUM(CASE WHEN pk < CAST('0.2' AS DOUBLE)
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_oversold,
+               {o_lsum('pk')} AS k_q6_sum,
+               CAST(SUM(CASE WHEN k2 IS NOT NULL AND pk IS NOT NULL
+                                  AND k1 IS NOT NULL AND k2 IS NOT NULL
+                             THEN CAST(FLOOR(((pk + k1) + k2)
+                                             / CAST('3.0' AS DOUBLE) * 1e6)
+                                       AS BIGINT) ELSE 0 END) AS BIGINT)
+                   AS d_q6_sum
+        FROM kd GROUP BY event_type ORDER BY event_type
+    """,
+)
+def ts_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stochastic oscillator per daily event series: %K = position of
+    today's level inside the rolling 14-day [low, high] channel, %D =
+    3-day mean of %K, with an overbought/oversold census (Lane's
+    momentum indicator — the bounded cousin of ts_bollinger_bands'
+    envelope). Exactness: channel min/max are exact DECIMAL window
+    extremes crossing to double once via VARCHAR; %K is one guarded
+    division (flat channel NULLs identically); %D is the PINNED
+    three-term mean ((k + k1) + k2)/3; census totals survive
+    aggregation as floor-quantized q6 BIGINTs, so the per-series SUM
+    is exact integer arithmetic. One map-side daily agg; windows over
+    the 30-row series per type."""
+    daily = event_daily_rn(spark, sf_dir)
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("rn")
+        .rowsBetween(-13, Window.currentRow)
+    )
+    roll = daily.select(
+        "event_type",
+        "rn",
+        as_d(F.col("x")).alias("xd"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("wn"),
+        as_d(F.min("x").over(w)).alias("lo"),
+        as_d(F.max("x").over(w)).alias("hi"),
+    )
+    k = roll.filter(F.col("wn") == 14).select(
+        "event_type",
+        "rn",
+        F.when(
+            F.col("hi") > F.col("lo"),
+            (F.col("xd") - F.col("lo")) / (F.col("hi") - F.col("lo")),
+        ).alias("pk"),
+    )
+    wl = Window.partitionBy("event_type").orderBy("rn")
+    kd = k.select(
+        "event_type",
+        "rn",
+        "pk",
+        F.lag("pk", 1).over(wl).alias("k1"),
+        F.lag("pk", 2).over(wl).alias("k2"),
+    )
+    third = F.lit("3.0").cast("double")
+    return (
+        kd.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_days"),
+            F.sum(
+                F.when(F.col("pk") > F.lit("0.8").cast("double"), 1).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_overbought"),
+            F.sum(
+                F.when(F.col("pk") < F.lit("0.2").cast("double"), 1).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_oversold"),
+            lsum(F.col("pk")).alias("k_q6_sum"),
+            F.sum(
+                F.when(
+                    F.col("pk").isNotNull()
+                    & F.col("k1").isNotNull()
+                    & F.col("k2").isNotNull(),
+                    F.floor(
+                        ((F.col("pk") + F.col("k1")) + F.col("k2"))
+                        / third
+                        * 1e6
+                    ).cast("bigint"),
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("d_q6_sum"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# shared daily q6-quantized event values (seasonal MK + Hampel)
+
+@register(
+    "ts_seasonal_mann_kendall",
+    tags=("timeseries", "stats"),
+    oracle=f"""
+        WITH daily AS MATERIALIZED (
+            SELECT event_type, d, v, CAST(isodow(d) - 1 AS INT) AS wd
+            FROM ({DAILY_Q6_SQL})
+        ),
+        s_wd AS (
+            SELECT a.event_type, a.wd,
+                   CAST(SUM(CASE WHEN b.v > a.v THEN 1
+                                 WHEN b.v < a.v THEN -1 ELSE 0 END)
+                        AS BIGINT) AS s
+            FROM daily a JOIN daily b
+              ON a.event_type = b.event_type AND a.wd = b.wd AND a.d < b.d
+            GROUP BY a.event_type, a.wd
+        ),
+        n_wd AS (
+            SELECT event_type, wd, CAST(COUNT(*) AS BIGINT) AS n
+            FROM daily GROUP BY event_type, wd
+        ),
+        tt_wd AS (
+            SELECT event_type, wd,
+                   CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tt
+            FROM (SELECT event_type, wd, v, CAST(COUNT(*) AS BIGINT) AS t
+                  FROM daily GROUP BY event_type, wd, v)
+            GROUP BY event_type, wd
+        ),
+        per_wd AS (
+            SELECT n.event_type, n.wd, n.n,
+                   COALESCE(s.s, 0) AS s,
+                   n.n * (n.n - 1) * (2 * n.n + 5) - t.tt AS varnum
+            FROM n_wd n
+            LEFT JOIN s_wd s ON s.event_type = n.event_type AND s.wd = n.wd
+            JOIN tt_wd t ON t.event_type = n.event_type AND t.wd = n.wd
+        )
+        SELECT event_type,
+               CAST(SUM(n) AS BIGINT) AS n_days,
+               CAST(SUM(s) AS BIGINT) AS s_total,
+               CAST(SUM(varnum) AS BIGINT) AS varnum_total,
+               CASE WHEN SUM(varnum) > 0 THEN
+                 CAST(CASE WHEN SUM(s) > 0 THEN SUM(s) - 1
+                           WHEN SUM(s) < 0 THEN SUM(s) + 1
+                           ELSE 0 END AS DOUBLE)
+                 / SQRT(CAST(SUM(varnum) AS DOUBLE) / CAST(18 AS DOUBLE))
+               END AS z
+        FROM per_wd GROUP BY event_type
+    """,
+)
+def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonal Mann-Kendall trend test per event type (Hirsch-Slack):
+    the MK S statistic computed WITHIN each weekday season (so weekly
+    cycles can't masquerade as trend), seasons then summed — S_total,
+    its tie-corrected variance numerator (exact integer: sum over
+    seasons of n(n-1)(2n+5) - sum t(t-1)(2t+5)), and the
+    continuity-corrected z. Daily values are 1e-6 floor-quantized
+    BIGINTs so every sign comparison and tie group is exact.
+    Distributed shape: the pairwise stage is per (type, weekday) over
+    CALENDAR-BOUNDED daily aggregates (~2400 days at any SF — the
+    pair count is bounded at ~350^2 per season regardless of corpus
+    size), keyed so a cluster partitions by (type, weekday). z is the
+    single presentation expression (IEEE sqrt + one division)."""
+    daily = daily_q6(spark, sf_dir).withColumn(
+        "wd", F.weekday("d").cast("int")
+    ).persist()
+    a = daily.select(
+        "event_type", "wd", F.col("d").alias("d1"), F.col("v").alias("v1")
+    )
+    b = daily.select(
+        "event_type", "wd", F.col("d").alias("d2"), F.col("v").alias("v2")
+    )
+    s_wd = (
+        a.join(b, ["event_type", "wd"])
+        .filter(F.col("d1") < F.col("d2"))
+        .groupBy("event_type", "wd")
+        .agg(
+            F.sum(
+                F.when(F.col("v2") > F.col("v1"), 1)
+                .when(F.col("v2") < F.col("v1"), -1)
+                .otherwise(0)
+            )
+            .cast("bigint")
+            .alias("s")
+        )
+    )
+    n_wd = daily.groupBy("event_type", "wd").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    tt_wd = (
+        daily.groupBy("event_type", "wd", "v")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
+        .groupBy("event_type", "wd")
+        .agg(
+            F.sum(
+                F.col("t") * (F.col("t") - 1) * (F.lit(2) * F.col("t") + 5)
+            )
+            .cast("bigint")
+            .alias("tt")
+        )
+    )
+    per_wd = (
+        n_wd.join(s_wd, ["event_type", "wd"], "left")
+        .join(tt_wd, ["event_type", "wd"])
+        .select(
+            "event_type",
+            "wd",
+            "n",
+            F.coalesce(F.col("s"), F.lit(0)).alias("s"),
+            (
+                F.col("n") * (F.col("n") - 1) * (F.lit(2) * F.col("n") + 5)
+                - F.col("tt")
+            ).alias("varnum"),
+        )
+    )
+    agg = per_wd.groupBy("event_type").agg(
+        F.sum("n").cast("bigint").alias("n_days"),
+        F.sum("s").cast("bigint").alias("s_total"),
+        F.sum("varnum").cast("bigint").alias("varnum_total"),
+    )
+    s_adj = (
+        F.when(F.col("s_total") > 0, F.col("s_total") - 1)
+        .when(F.col("s_total") < 0, F.col("s_total") + 1)
+        .otherwise(0)
+        .cast("double")
+    )
+    z = F.when(
+        F.col("varnum_total") > 0,
+        s_adj
+        / F.sqrt(
+            F.col("varnum_total").cast("double") / F.lit(18).cast("double")
+        ),
+    )
+    return agg.select(
+        "event_type", "n_days", "s_total", "varnum_total", z.alias("z")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_periodogram — quantized-trig DFT power at a literal frequency grid
+
+
+@register(
+    "ts_periodogram",
+    tags=("timeseries", "stats"),
+    oracle=f"""
+        WITH daily AS MATERIALIZED ({DAILY_Q6_SQL}),
+        idx AS (
+            SELECT event_type, v,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+                                           ORDER BY d) AS BIGINT) AS t,
+                   CAST(COUNT(*) OVER (PARTITION BY event_type)
+                        AS BIGINT) AS n,
+                   CAST(SUM(v) OVER (PARTITION BY event_type)
+                        AS BIGINT) AS s
+            FROM daily
+        ),
+        freqs AS (SELECT unnest([1, 2, 3, 7, 14]) AS kf),
+        terms AS (
+            SELECT event_type, kf, n,
+                   CAST(SUM((n * v - s)
+                     * CAST(cos(CAST('6.283185307179586' AS DOUBLE)
+                                * CAST(kf AS DOUBLE)
+                                * CAST(t - 1 AS DOUBLE)
+                                / CAST(n AS DOUBLE))
+                            AS DECIMAL(12,6))) AS DECIMAL(38,6)) AS sc,
+                   CAST(SUM((n * v - s)
+                     * CAST(sin(CAST('6.283185307179586' AS DOUBLE)
+                                * CAST(kf AS DOUBLE)
+                                * CAST(t - 1 AS DOUBLE)
+                                / CAST(n AS DOUBLE))
+                            AS DECIMAL(12,6))) AS DECIMAL(38,6)) AS ss
+            FROM idx CROSS JOIN freqs
+            GROUP BY event_type, kf, n
+        )
+        SELECT event_type, CAST(kf AS INT) AS kf, n AS n_days,
+               (CAST(CAST(sc AS VARCHAR) AS DOUBLE)
+                  * CAST(CAST(sc AS VARCHAR) AS DOUBLE)
+                + CAST(CAST(ss AS VARCHAR) AS DOUBLE)
+                  * CAST(CAST(ss AS VARCHAR) AS DOUBLE))
+               / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
+               / 1e12 AS power
+        FROM terms
+    """,
+)
+def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Periodogram power of each event type's daily series at 5 literal
+    frequencies (k = 1, 2, 3, 7, 14 cycles over the observed window) —
+    the spectral screen for periodic structure (weekly cycles,
+    campaign cadence) that autocorrelation smears across lags:
+    I(f_k) = |sum (v_t - vbar) e^{-2pi i k t/n}|² / n. Exactness:
+    daily values are the house q6 BIGINTs; centering multiplies
+    through by n (vc = n·v - S, exact BIGINT — no float mean);
+    cos/sin evaluate on an IDENTICAL double angle expression
+    (string-routed 2π constant) and quantize to DECIMAL(12,6) (the
+    quantized-ln precedent applied to trig: a libm 1-ulp spread
+    cannot realistically straddle a 1e-6 boundary), so both DFT sums
+    are exact integer-by-decimal dot products; power is one shared
+    presentation expression (the /n³ undoes the n² centering scale,
+    /1e12 undoes q6²). Distributed shape: windows and sums are
+    per-event-type over CALENDAR-BOUNDED daily aggregates; the
+    frequency grid is a 5-row literal broadcast."""
+    daily = daily_q6(spark, sf_dir)
+    w = Window.partitionBy("event_type")
+    idx = daily.select(
+        "event_type",
+        "v",
+        F.row_number()
+        .over(Window.partitionBy("event_type").orderBy("d"))
+        .cast("bigint")
+        .alias("t"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("n"),
+        F.sum("v").over(w).cast("bigint").alias("s"),
+    )
+    freqs = daily.sparkSession.createDataFrame(
+        [(1,), (2,), (3,), (7,), (14,)], "kf int"
+    )
+    two_pi = F.expr("CAST('6.283185307179586' AS DOUBLE)")
+    angle = (
+        two_pi
+        * F.col("kf").cast("double")
+        * (F.col("t") - 1).cast("double")
+        / F.col("n").cast("double")
+    )
+    vc = F.col("n") * F.col("v") - F.col("s")
+    terms = (
+        idx.crossJoin(F.broadcast(freqs))
+        .groupBy("event_type", "kf", "n")
+        .agg(
+            F.sum(vc * F.cos(angle).cast("decimal(12,6)"))
+            .cast("decimal(38,6)")
+            .alias("sc"),
+            F.sum(vc * F.sin(angle).cast("decimal(12,6)"))
+            .cast("decimal(38,6)")
+            .alias("ss"),
+        )
+    )
+    nd = F.col("n").cast("double")
+    power = (
+        (as_d(F.col("sc")) * as_d(F.col("sc"))
+         + as_d(F.col("ss")) * as_d(F.col("ss")))
+        / (nd * nd * nd)
+        / F.lit(1e12)
+    )
+    return terms.select(
+        "event_type",
+        F.col("kf").cast("int").alias("kf"),
+        F.col("n").alias("n_days"),
+        power.alias("power"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_cox_stuart — Cox-Stuart paired-halves trend test
+
+
+@register(
+    "ts_cox_stuart",
+    tags=("timeseries", "stats"),
+    oracle=f"""
+        WITH daily AS ({DAILY_Q6_SQL}),
+        idxed AS (
+            SELECT event_type, v,
+                   ROW_NUMBER() OVER (PARTITION BY event_type
+                                      ORDER BY d) AS i,
+                   COUNT(*) OVER (PARTITION BY event_type) AS n
+            FROM daily
+        ),
+        pairs AS (
+            SELECT a.event_type,
+                   CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS pos,
+                   CASE WHEN b.v < a.v THEN 1 ELSE 0 END AS neg
+            FROM idxed a
+            JOIN idxed b ON b.event_type = a.event_type
+                        AND b.i = a.i + (a.n - a.n // 2)
+            WHERE a.i <= a.n // 2
+        )
+        SELECT event_type,
+               CAST(COUNT(*) AS BIGINT) AS n_pairs,
+               CAST(SUM(pos) AS BIGINT) AS n_up,
+               CAST(SUM(neg) AS BIGINT) AS n_down,
+               CASE WHEN SUM(pos) + SUM(neg) > 0 THEN
+                   (CAST(SUM(pos) AS DOUBLE)
+                      - CAST(SUM(pos) + SUM(neg) AS DOUBLE)
+                        / CAST(2 AS DOUBLE))
+                   / sqrt(CAST(SUM(pos) + SUM(neg) AS DOUBLE)
+                          / CAST(4 AS DOUBLE)) END AS z
+        FROM pairs GROUP BY event_type
+    """,
+)
+def ts_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cox-Stuart trend test per event type: pair day i of the first
+    half with day i + ceil(n/2) of the second half and sign-test the
+    differences — the assumption-free 'is this series drifting'
+    screen. Exactness: pairing index i + (n - n DIV 2) is integer
+    arithmetic (DuckDB `//` twin), daily values are exact q6 BIGINTs
+    so the up/down signs are exact, ties drop from the effective
+    sample on both engines, and the binomial z is one double
+    expression NULL-guarded by the identical n_up + n_down > 0
+    predicate. Distributed shape: per-type row_number windows over
+    calendar-bounded daily rows; the half-offset pairing is an
+    equi-join on (event_type, index) — never a cross pairing."""
+    daily = daily_q6(spark, sf_dir)
+    w_t = Window.partitionBy("event_type").orderBy("d")
+    w_all = Window.partitionBy("event_type")
+    idxed = daily.select(
+        "event_type",
+        "v",
+        F.row_number().over(w_t).alias("i"),
+        F.count(F.lit(1)).over(w_all).alias("n"),
+    ).persist()
+    a = idxed.filter(F.col("i") <= F.expr("n DIV 2")).select(
+        "event_type",
+        (F.col("i") + (F.col("n") - F.expr("n DIV 2"))).alias("j"),
+        F.col("v").alias("va"),
+    )
+    b = idxed.select(
+        "event_type", F.col("i").alias("j"), F.col("v").alias("vb")
+    )
+    pairs = a.join(b, ["event_type", "j"]).select(
+        "event_type",
+        (F.col("vb") > F.col("va")).cast("int").alias("pos"),
+        (F.col("vb") < F.col("va")).cast("int").alias("neg"),
+    )
+    spos = F.sum("pos")
+    sneg = F.sum("neg")
+    nt = (spos + sneg).cast("double")
+    z = F.when(
+        spos + sneg > 0,
+        (spos.cast("double") - nt / F.lit(2).cast("double"))
+        / F.sqrt(nt / F.lit(4).cast("double")),
+    )
+    return pairs.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        spos.cast("bigint").alias("n_up"),
+        sneg.cast("bigint").alias("n_down"),
+        z.alias("z"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_spectral_entropy — normalized entropy of the periodogram powers
+
+
+@register(
+    "ts_spectral_entropy",
+    tags=("timeseries", "stats"),
+    oracle=f"""
+        WITH daily AS MATERIALIZED ({DAILY_Q6_SQL}),
+        idx AS (
+            SELECT event_type, v,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+                                           ORDER BY d) AS BIGINT) AS t,
+                   CAST(COUNT(*) OVER (PARTITION BY event_type)
+                        AS BIGINT) AS n,
+                   CAST(SUM(v) OVER (PARTITION BY event_type)
+                        AS BIGINT) AS s
+            FROM daily
+        ),
+        freqs AS (SELECT unnest([1, 2, 3, 7, 14]) AS kf),
+        terms AS (
+            SELECT event_type, kf, n,
+                   CAST(SUM((n * v - s)
+                     * CAST(cos(CAST('6.283185307179586' AS DOUBLE)
+                                * CAST(kf AS DOUBLE)
+                                * CAST(t - 1 AS DOUBLE)
+                                / CAST(n AS DOUBLE))
+                            AS DECIMAL(12,6))) AS DECIMAL(38,6)) AS sc,
+                   CAST(SUM((n * v - s)
+                     * CAST(sin(CAST('6.283185307179586' AS DOUBLE)
+                                * CAST(kf AS DOUBLE)
+                                * CAST(t - 1 AS DOUBLE)
+                                / CAST(n AS DOUBLE))
+                            AS DECIMAL(12,6))) AS DECIMAL(38,6)) AS ss
+            FROM idx CROSS JOIN freqs
+            GROUP BY event_type, kf, n
+        ),
+        pw AS (
+            SELECT event_type, kf,
+                   (CAST(CAST(sc AS VARCHAR) AS DOUBLE)
+                      * CAST(CAST(sc AS VARCHAR) AS DOUBLE)
+                    + CAST(CAST(ss AS VARCHAR) AS DOUBLE)
+                      * CAST(CAST(ss AS VARCHAR) AS DOUBLE))
+                   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
+                      * CAST(n AS DOUBLE)) / 1e12 AS p
+            FROM terms
+        ),
+        tot AS (
+            SELECT event_type,
+                   CAST(COUNT(*) AS BIGINT) AS n_freqs,
+                   {o_ordered_fold_sum('kf', 'p')}
+                       AS pt
+            FROM pw GROUP BY event_type
+        ),
+        ent AS (
+            SELECT pw.event_type, tot.n_freqs,
+                   {o_ordered_fold_sum(
+                       'pw.kf',
+                       '-(pw.p / tot.pt) * CAST(CAST(ln(pw.p / tot.pt) AS'
+                       ' DECIMAL(12,6)) AS DOUBLE)',
+                   )} AS h
+            FROM pw JOIN tot ON tot.event_type = pw.event_type
+            GROUP BY pw.event_type, tot.n_freqs
+        )
+        SELECT event_type, n_freqs, h AS spectral_entropy,
+               h / CAST('1.6094379124341003' AS DOUBLE)
+                   AS spectral_entropy_norm
+        FROM ent
+    """,
+)
+def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Normalized spectral entropy of each event type's daily series
+    over the ts_periodogram frequency grid — low entropy = power
+    concentrated at one cycle (strong periodicity), entropy near 1 =
+    white-noise-flat spectrum; the single-number periodicity screen
+    on top of the periodogram's per-frequency view. Exactness: powers
+    are the ts_periodogram quantized-trig recipe (exact integer-by-
+    DECIMAL(12,6) dot products, one shared presentation expression);
+    the 5-power normalization and the entropy both fold in pinned kf
+    order (the ANOVA recipe — never an unordered double sum); each
+    ln(share) quantizes to DECIMAL(12,6); ln(5) enters as a
+    Python-generated double literal. Distributed shape identical to
+    ts_periodogram: per-type calendar-bounded windows, 5-row literal
+    frequency grid, k-type state."""
+    daily = daily_q6(spark, sf_dir)
+    w = Window.partitionBy("event_type")
+    idx = daily.select(
+        "event_type",
+        "v",
+        F.row_number()
+        .over(Window.partitionBy("event_type").orderBy("d"))
+        .cast("bigint")
+        .alias("t"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("n"),
+        F.sum("v").over(w).cast("bigint").alias("s"),
+    )
+    freqs = daily.sparkSession.createDataFrame(
+        [(1,), (2,), (3,), (7,), (14,)], "kf int"
+    )
+    two_pi = F.expr("CAST('6.283185307179586' AS DOUBLE)")
+    angle = (
+        two_pi
+        * F.col("kf").cast("double")
+        * (F.col("t") - 1).cast("double")
+        / F.col("n").cast("double")
+    )
+    vc = F.col("n") * F.col("v") - F.col("s")
+    terms = (
+        idx.crossJoin(F.broadcast(freqs))
+        .groupBy("event_type", "kf", "n")
+        .agg(
+            F.sum(vc * F.cos(angle).cast("decimal(12,6)"))
+            .cast("decimal(38,6)")
+            .alias("sc"),
+            F.sum(vc * F.sin(angle).cast("decimal(12,6)"))
+            .cast("decimal(38,6)")
+            .alias("ss"),
+        )
+    )
+    nd = F.col("n").cast("double")
+    power = (
+        (
+            as_d(F.col("sc")) * as_d(F.col("sc"))
+            + as_d(F.col("ss")) * as_d(F.col("ss"))
+        )
+        / (nd * nd * nd)
+        / F.lit(1e12)
+    )
+    pw = terms.select("event_type", "kf", power.alias("p"))
+    tot = pw.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_freqs"),
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("kf"), F.col("p")))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["p"],
+        ).alias("pt"),
+    )
+    ent = (
+        pw.join(tot, "event_type")
+        .groupBy("event_type", "n_freqs")
+        .agg(
+            F.aggregate(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(
+                            F.col("kf"),
+                            (
+                                -(F.col("p") / F.col("pt"))
+                                * as_d(
+                                    F.log(F.col("p") / F.col("pt")).cast(
+                                        "decimal(12,6)"
+                                    )
+                                )
+                            ).alias("term"),
+                        )
+                    )
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x["term"],
+            ).alias("h")
+        )
+    )
+    ln5 = F.expr("CAST('1.6094379124341003' AS DOUBLE)")
+    return ent.select(
+        "event_type",
+        "n_freqs",
+        F.col("h").alias("spectral_entropy"),
+        (F.col("h") / ln5).alias("spectral_entropy_norm"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_permutation_entropy — ordinal-pattern complexity per event type
+
+
+@register(
+    "ts_permutation_entropy",
+    tags=("timeseries", "stats"),
+    oracle=f"""
+        WITH daily AS ({DAILY_Q6_SQL}),
+        seq AS (
+            SELECT event_type, v,
+                   LEAD(v, 1) OVER (PARTITION BY event_type ORDER BY d)
+                       AS v1,
+                   LEAD(v, 2) OVER (PARTITION BY event_type ORDER BY d)
+                       AS v2
+            FROM daily
+        ),
+        pat AS (
+            SELECT event_type,
+                   CASE
+                     WHEN v <= v1 AND v1 <= v2 THEN 0
+                     WHEN v <= v2 AND NOT (v1 <= v2) AND v <= v1 THEN 1
+                     WHEN NOT (v <= v1) AND v <= v2 THEN 2
+                     WHEN v1 <= v2 AND NOT (v <= v2) THEN 3
+                     WHEN NOT (v1 <= v2) AND v <= v1 AND NOT (v <= v2)
+                          THEN 4
+                     ELSE 5
+                   END AS p
+            FROM seq WHERE v2 IS NOT NULL
+        ),
+        cnt AS (
+            SELECT event_type, p, CAST(COUNT(*) AS BIGINT) AS c
+            FROM pat GROUP BY event_type, p
+        ),
+        tot AS (
+            SELECT event_type, CAST(SUM(c) AS BIGINT) AS n
+            FROM cnt GROUP BY event_type
+        ),
+        ent AS (
+            SELECT c.event_type, t.n,
+                   {o_ordered_fold_sum(
+                       'c.p',
+                       '-(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE)) *'
+                       ' CAST(CAST(ln(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE)) AS'
+                       ' DECIMAL(12,6)) AS DOUBLE)',
+                   )} AS h
+            FROM cnt c JOIN tot t ON t.event_type = c.event_type
+            GROUP BY c.event_type, t.n
+        )
+        SELECT event_type, n AS n_windows, h AS perm_entropy,
+               h / CAST('1.791759469228055' AS DOUBLE)
+                   AS perm_entropy_norm
+        FROM ent
+    """,
+)
+def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Permutation entropy (Bandt-Pompe, order m = 3) per event type:
+    the Shannon entropy of the ordinal patterns of consecutive daily
+    triples — the standard model-free complexity measure (low =
+    predictable motif structure, near 1 = ordinally random), robust
+    to monotone transforms where spectral measures aren't. Ordinal
+    patterns use the STABLE tie rule (earlier index wins ties), so
+    each pattern is a pure function of three integer comparisons
+    (a<=b, a<=c, b<=c) — the same CASE triple on both engines, no
+    sort primitive whose tie behavior could diverge. Counts are exact
+    BIGINTs; the <=6-term entropy folds in pinned pattern order with
+    quantized-ln DECIMAL(12,6) shares; ln 6 enters as a Python-
+    generated literal. Distributed shape: per-type LEAD windows over
+    CALENDAR-bounded daily rows, k-type state."""
+    daily = daily_q6(spark, sf_dir)
+    w_t = Window.partitionBy("event_type").orderBy("d")
+    seq = daily.select(
+        "event_type",
+        "v",
+        F.lead("v", 1).over(w_t).alias("v1"),
+        F.lead("v", 2).over(w_t).alias("v2"),
+    ).filter(F.col("v2").isNotNull())
+    a, b, c = F.col("v"), F.col("v1"), F.col("v2")
+    pat = seq.select(
+        "event_type",
+        F.when((a <= b) & (b <= c), 0)
+        .when((a <= c) & ~(b <= c) & (a <= b), 1)
+        .when(~(a <= b) & (a <= c), 2)
+        .when((b <= c) & ~(a <= c), 3)
+        .when(~(b <= c) & (a <= b) & ~(a <= c), 4)
+        .otherwise(5)
+        .alias("p"),
+    )
+    cnt = pat.groupBy("event_type", "p").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
+    )
+    tot = cnt.groupBy("event_type").agg(
+        F.sum("c").cast("bigint").alias("n")
+    )
+    share = F.col("c").cast("double") / F.col("n").cast("double")
+    term = -share * as_d(F.log(share).cast("decimal(12,6)"))
+    ent = (
+        cnt.join(tot, "event_type")
+        .groupBy("event_type", "n")
+        .agg(
+            F.aggregate(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("p"), term.alias("t")))
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x["t"],
+            ).alias("h")
+        )
+    )
+    ln6 = F.expr("CAST('1.791759469228055' AS DOUBLE)")
+    return ent.select(
+        "event_type",
+        F.col("n").alias("n_windows"),
+        F.col("h").alias("perm_entropy"),
+        (F.col("h") / ln6).alias("perm_entropy_norm"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_sample_entropy — SampEn(m=2) template matching per event type
+
+
+@register(
+    "ts_sample_entropy",
+    tags=("timeseries", "stats"),
+    oracle=f"""
+        WITH daily AS ({DAILY_Q6_SQL}),
+        seq AS (
+            SELECT event_type, v,
+                   LEAD(v, 1) OVER (PARTITION BY event_type ORDER BY d)
+                       AS v1,
+                   LEAD(v, 2) OVER (PARTITION BY event_type ORDER BY d)
+                       AS v2,
+                   ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d)
+                       AS i
+            FROM daily
+        ),
+        tmpl AS MATERIALIZED (
+            SELECT event_type, i, v, v1, v2 FROM seq
+            WHERE v2 IS NOT NULL
+        ),
+        sig AS (
+            SELECT event_type,
+                   CAST(COUNT(*) AS BIGINT) AS nt,
+                   CAST(SUM(v) AS BIGINT) AS s1,
+                   SUM(CAST(v AS DECIMAL(19,0)) * v) AS s2
+            FROM tmpl GROUP BY event_type
+        ),
+        r AS (
+            SELECT event_type, nt,
+                   CAST('0.2' AS DOUBLE)
+                   * sqrt((CAST(nt AS DOUBLE)
+                             * CAST(CAST(s2 AS VARCHAR) AS DOUBLE)
+                           - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
+                          / (CAST(nt AS DOUBLE) * CAST(nt AS DOUBLE)))
+                       AS rr
+            FROM sig
+        ),
+        pairs AS (
+            SELECT a.event_type,
+                   CAST(SUM(CASE WHEN
+                       CAST(abs(a.v - b.v) AS DOUBLE) <= r.rr AND
+                       CAST(abs(a.v1 - b.v1) AS DOUBLE) <= r.rr
+                       THEN 1 ELSE 0 END) AS BIGINT) AS b_cnt,
+                   CAST(SUM(CASE WHEN
+                       CAST(abs(a.v - b.v) AS DOUBLE) <= r.rr AND
+                       CAST(abs(a.v1 - b.v1) AS DOUBLE) <= r.rr AND
+                       CAST(abs(a.v2 - b.v2) AS DOUBLE) <= r.rr
+                       THEN 1 ELSE 0 END) AS BIGINT) AS a_cnt
+            FROM tmpl a
+            JOIN tmpl b ON b.event_type = a.event_type AND b.i > a.i
+            JOIN r ON r.event_type = a.event_type
+            GROUP BY a.event_type
+        )
+        SELECT p.event_type, r.nt AS n_templates, p.b_cnt, p.a_cnt,
+               CASE WHEN p.a_cnt > 0 AND p.b_cnt > 0 THEN
+                   -CAST(CAST(ln(CAST(p.a_cnt AS DOUBLE)
+                                 / CAST(p.b_cnt AS DOUBLE))
+                         AS DECIMAL(12,6)) AS DOUBLE) END AS sampen
+        FROM pairs p JOIN r ON r.event_type = p.event_type
+    """,
+)
+def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sample entropy SampEn(m=2, r=0.2*sigma) per event type — the
+    regularity statistic of physiology/finance fame: -ln(A/B) where B
+    counts template pairs matching on 2 consecutive values within
+    tolerance r and A those also matching on the 3rd; lower = more
+    self-similar. Template set: every index with a full (v, v1, v2)
+    triple, the SAME set for both counts (documented simplification
+    of the N-m vs N-m-1 edge; self-consistent and engine-identical).
+    Exactness: daily values are exact q6 BIGINTs so |v_i - v_j| is an
+    exact integer; r is one shared double expression off exact
+    population-variance sums (sigma over the template set); every
+    match test compares an exact-integer double against the identical
+    r; A and B are exact BIGINTs; the final ln quantizes to
+    DECIMAL(12,6) with an identical A>0 AND B>0 guard. Distributed
+    shape: the pair stage is an equi-join on event_type with the
+    index inequality as residual — per-type pair counts are
+    CALENDAR-bounded (~days^2/2, SF-invariant), never corpus-scaled;
+    corpus work is the one daily agg."""
+    daily = daily_q6(spark, sf_dir)
+    w_t = Window.partitionBy("event_type").orderBy("d")
+    tmpl = (
+        daily.select(
+            "event_type",
+            "v",
+            F.lead("v", 1).over(w_t).alias("v1"),
+            F.lead("v", 2).over(w_t).alias("v2"),
+            F.row_number().over(w_t).alias("i"),
+        )
+        .filter(F.col("v2").isNotNull())
+        .persist()  # consumed by the sigma agg AND the pair join
+    )
+    sig = tmpl.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nt"),
+        F.sum("v").cast("bigint").alias("s1"),
+        F.sum(F.col("v").cast("decimal(19,0)") * F.col("v")).alias("s2"),
+    )
+    ntd = F.col("nt").cast("double")
+    rr = F.expr("CAST('0.2' AS DOUBLE)") * F.sqrt(
+        (ntd * as_d(F.col("s2")) - F.col("s1").cast("double")
+         * F.col("s1").cast("double"))
+        / (ntd * ntd)
+    )
+    r = sig.select("event_type", "nt", rr.alias("rr"))
+    a = tmpl.select(
+        "event_type",
+        F.col("i").alias("ia"),
+        F.col("v").alias("va"),
+        F.col("v1").alias("va1"),
+        F.col("v2").alias("va2"),
+    )
+    b = tmpl.select(
+        "event_type",
+        F.col("i").alias("ib"),
+        F.col("v").alias("vb"),
+        F.col("v1").alias("vb1"),
+        F.col("v2").alias("vb2"),
+    )
+    m2 = (
+        F.abs(F.col("va") - F.col("vb")).cast("double") <= F.col("rr")
+    ) & (F.abs(F.col("va1") - F.col("vb1")).cast("double") <= F.col("rr"))
+    m3 = m2 & (
+        F.abs(F.col("va2") - F.col("vb2")).cast("double") <= F.col("rr")
+    )
+    pairs = (
+        a.join(b, "event_type")
+        .filter(F.col("ib") > F.col("ia"))
+        .join(r.select("event_type", "rr"), "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.sum(m2.cast("int")).cast("bigint").alias("b_cnt"),
+            F.sum(m3.cast("int")).cast("bigint").alias("a_cnt"),
+        )
+    )
+    sampen = F.when(
+        (F.col("a_cnt") > 0) & (F.col("b_cnt") > 0),
+        -as_d(
+            F.log(
+                F.col("a_cnt").cast("double") / F.col("b_cnt").cast("double")
+            ).cast("decimal(12,6)")
+        ),
+    )
+    return pairs.join(r.select("event_type", "nt"), "event_type").select(
+        "event_type",
+        F.col("nt").alias("n_templates"),
+        "b_cnt",
+        "a_cnt",
+        sampen.alias("sampen"),
     )

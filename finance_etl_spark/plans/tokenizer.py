@@ -423,7 +423,8 @@ def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FERT_ORACLE = _WP_ORACLE[: _WP_ORACLE.index("SELECT piece,")] + """
+# the path-following CTE ends with the rec block; the splice adds its comma
+_FERT_ORACLE = _WP_ORACLE[: _WP_ORACLE.index("SELECT piece,")].rstrip() + """,
 ppw AS (
     SELECT word, CAST(COUNT(piece) AS BIGINT) AS n_pieces
     FROM rec WHERE piece IS NOT NULL GROUP BY word
@@ -442,8 +443,6 @@ SELECT s.source,
 FROM src s JOIN ppw p ON p.word = s.word
 GROUP BY s.source ORDER BY s.source
 """
-# the path-following CTE ends with the rec block; splice needs the comma
-_FERT_ORACLE = _FERT_ORACLE.replace(")\n\nppw AS", "),\nppw AS", 1)
 
 
 @register(

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.udfs import median_per_group, normalize_text_pandas
 from finance_etl_spark.io.readers import load_table
+from finance_etl_spark.plans.recipes import ASOF_LAST_PURCHASE_SQL
 from finance_etl_spark.plans.registry import register
 
 
@@ -227,16 +228,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "udf_cogrouped_asof",
     tags=("udf", "pandas", "cogroup", "asof"),
-    oracle="""
-        WITH clicks AS (SELECT event_id, user_id, ts FROM events
-                        WHERE event_type = 'click'),
-             purchases AS (SELECT user_id, ts, MAX(value) AS value
-                           FROM events WHERE event_type = 'purchase'
-                           GROUP BY user_id, ts)
-        SELECT c.event_id, c.user_id, c.ts, p.value AS last_purchase_value
-        FROM clicks c ASOF LEFT JOIN purchases p
-          ON c.user_id = p.user_id AND c.ts >= p.ts
-    """,
+    oracle=ASOF_LAST_PURCHASE_SQL,
 )
 def udf_cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-grouped applyInPandas: the two keyed relations are shuffled

@@ -3171,3 +3171,197 @@ def vec_mmr_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     first = best(pool.withColumn("score", F.col("relq")), 1)
     return iterate(first, step, 3).orderBy("query_id", "pick")
+
+
+@register(
+    "vec_cosine_histogram",
+    tags=("vector", "similarity", "agg"),
+    oracle=f"""
+        WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
+        pairs AS (
+            SELECT a.vec_id AS i, (a.vec_id * 7 + 13) % n.n AS j
+            FROM embeddings a CROSS JOIN n
+            WHERE (a.vec_id * 7 + 13) % n.n <> a.vec_id
+        ),
+        scored AS (
+            SELECT {_cos('a.embedding', 'b.embedding')} AS cos_sim
+            FROM pairs
+            JOIN embeddings a ON a.vec_id = pairs.i
+            JOIN embeddings b ON b.vec_id = pairs.j
+        )
+        , binned AS (
+            SELECT CAST(LEAST(19, FLOOR((cos_sim + 1) * 10)) AS BIGINT)
+                       AS bin
+            FROM scored
+        )
+        SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+               CAST(bin AS DOUBLE) / 10 - 1 AS bin_lo
+        FROM binned GROUP BY bin ORDER BY bin
+    """,
+)
+def vec_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cosine-similarity histogram over a deterministic linear pairing
+    of the embedding space (j = (7i+13) mod N, self-pairs dropped) —
+    the anisotropy diagnostic of an embedding table: a healthy space
+    piles mass near 0; a collapsed one (anisotropic, post-bad-
+    finetune) piles near 1 and ruins every cosine threshold
+    downstream. One cosine per vector (LINEAR — the pairing replaces
+    any quadratic sample), computed as the sequential-fold exact
+    double cosine both engines share bit-identically (vectors.py
+    contract); binning floors into 20 fixed buckets of width 0.1.
+    Scale shape: one self-join on the derived key, no shuffle beyond
+    the id join."""
+    e = load_table(spark, sf_dir, "embeddings")
+    n = e.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    pairs = (
+        e.crossJoin(F.broadcast(n))
+        .select(
+            F.col("vec_id").alias("i"),
+            ((F.col("vec_id") * 7 + 13) % F.col("n")).alias("j"),
+        )
+        .filter(F.col("j") != F.col("i"))
+    )
+    a = e.select(F.col("vec_id").alias("i"), F.col("embedding").alias("ea"))
+    b = e.select(F.col("vec_id").alias("j"), F.col("embedding").alias("eb"))
+    scored = (
+        pairs.join(a, "i")
+        .join(b, "j")
+        .select(cosine("ea", "eb").alias("cos_sim"))
+    )
+    bin_ = F.least(F.lit(19), F.floor((F.col("cos_sim") + 1) * 10)).cast(
+        "bigint"
+    )
+    return (
+        scored.groupBy(bin_.alias("bin"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
+        .select(
+            "bin",
+            "n_pairs",
+            (F.col("bin").cast("double") / 10 - 1).alias("bin_lo"),
+        )
+        .orderBy("bin")
+    )
+
+
+@register(
+    "vec_rrf_fusion",
+    tags=("vector", "similarity", "eval"),
+    oracle=f"""
+        WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
+                   FROM embeddings WHERE vec_id < 5),
+        scored AS MATERIALIZED (
+            SELECT q.query_id, e.vec_id AS cand_id,
+                   {_DOT.format(a='q.q_emb', b='e.embedding')}
+                     / ({_NORM.format(a='q.q_emb')}
+                        * {_NORM.format(a='e.embedding')}) AS cos_sim,
+                   {_SQDIST.format(a='q.q_emb', b='e.embedding')} AS dist_sq
+            FROM q JOIN embeddings e ON e.vec_id <> q.query_id
+        ),
+        ra AS (
+            SELECT query_id, cand_id,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                        ORDER BY cos_sim DESC, cand_id) AS INT) AS rank_cos
+            FROM scored QUALIFY rank_cos <= 20
+        ),
+        rb AS (
+            SELECT query_id, cand_id,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                        ORDER BY dist_sq, cand_id) AS INT) AS rank_l2
+            FROM scored QUALIFY rank_l2 <= 20
+        ),
+        fused AS (
+            SELECT query_id, cand_id, rank_cos, rank_l2,
+                   COALESCE(CAST(1 AS DOUBLE)
+                            / CAST(60 + rank_cos AS DOUBLE),
+                            CAST(0 AS DOUBLE))
+                   + COALESCE(CAST(1 AS DOUBLE)
+                              / CAST(60 + rank_l2 AS DOUBLE),
+                              CAST(0 AS DOUBLE)) AS rrf_score
+            FROM ra FULL JOIN rb USING (query_id, cand_id)
+        )
+        SELECT query_id, cand_id, rank_cos, rank_l2, rrf_score,
+               fused_rank
+        FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                             ORDER BY rrf_score DESC, cand_id) AS INT)
+                            AS fused_rank
+              FROM fused)
+        WHERE fused_rank <= 10
+    """,
+)
+def vec_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reciprocal-rank fusion (RRF, Cormack et al. 2009) of two
+    retrieval rankings — cosine similarity and L2 distance — for 5
+    query vectors: score = sum over lists of 1/(60+rank), the
+    standard way hybrid search merges dense + sparse (or two dense)
+    rankers without score calibration. Exactness: both base scores
+    are the house pinned element-order folds (dot/norm and the
+    squared-difference fold twin list_sum's sequential semantics);
+    ranks are integers with deterministic id tiebreaks; each RRF term
+    is one exact IEEE division of integers and the two terms add in
+    fixed written order, so the fused ranking twins bit-for-bit.
+    Distributed shape: 5-query broadcast against one corpus scan (the
+    documented brute-force eval baseline — production candidate
+    generation swaps in the LSH/IVF index paths); top-20 per ranking
+    via per-query windows; the fusion join carries <=40 rows per
+    query."""
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+    diff_sq = F.aggregate(
+        F.zip_with(
+            F.col("q_emb"),
+            F.col("embedding"),
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    scored = (
+        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("cand_id"),
+            cosine("q_emb", "embedding").alias("cos_sim"),
+            diff_sq.alias("dist_sq"),
+        )
+        .persist()
+    )
+    wa = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), "cand_id"
+    )
+    wb = Window.partitionBy("query_id").orderBy("dist_sq", "cand_id")
+    ra = (
+        scored.select(
+            "query_id",
+            "cand_id",
+            F.row_number().over(wa).cast("int").alias("rank_cos"),
+        )
+        .filter(F.col("rank_cos") <= 20)
+    )
+    rb = (
+        scored.select(
+            "query_id",
+            "cand_id",
+            F.row_number().over(wb).cast("int").alias("rank_l2"),
+        )
+        .filter(F.col("rank_l2") <= 20)
+    )
+    zero = F.lit(0).cast("double")
+    one = F.lit(1).cast("double")
+    rrf = F.coalesce(
+        one / (F.lit(60) + F.col("rank_cos")).cast("double"), zero
+    ) + F.coalesce(one / (F.lit(60) + F.col("rank_l2")).cast("double"), zero)
+    fused = ra.join(rb, ["query_id", "cand_id"], "full_outer").select(
+        "query_id", "cand_id", "rank_cos", "rank_l2", rrf.alias("rrf_score")
+    )
+    wf = Window.partitionBy("query_id").orderBy(
+        F.col("rrf_score").desc(), "cand_id"
+    )
+    return (
+        fused.withColumn(
+            "fused_rank", F.row_number().over(wf).cast("int")
+        )
+        .filter(F.col("fused_rank") <= 10)
+    )

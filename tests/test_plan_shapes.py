@@ -901,7 +901,7 @@ def test_bagging_oob_no_fanout_persist(spark, sf_dir):
     assert "ws#" in p or "ws`" in p or " ws" in p, f"packed-word column missing:\n{p[:800]}"
 
 
-def test_round11_rank_windows_bucket_partitioned(spark, sf_dir):
+def test_mood_jt_rank_windows_bucket_partitioned(spark, sf_dir):
     """Round-11 rank machinery rides bucket+carry: in Mood's median
     and Jonckheere-Terpstra, every Window over the corpus-scale
     distinct-value relation partitions by bkt (the only unpartitioned
@@ -1044,7 +1044,7 @@ def test_edge_triangle_support_joins_are_key_joins(spark, sf_dir):
     assert re.search(r"(SortMergeJoin|BroadcastHashJoin) \[[^\]]*cn#", p)
 
 
-def test_ts_round13_windows_partition_by_event_type(spark, sf_dir):
+def test_theil_u2_oscillator_windows_partition_by_event_type(spark, sf_dir):
     """ts_theil_u2 / ts_stochastic_oscillator: lag and channel windows
     ride the 30-row-per-type daily aggregate, partitioned by
     event_type — the corpus-scale work is the map-side-combining daily

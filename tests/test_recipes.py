@@ -1,12 +1,15 @@
 """Cross-engine recipes: every Spark half in functions/money.py and
 plans/recipes.py must give the same canonical rows as its DuckDB SQL
 twin on the same sf0.001 input, and no other module may restate a
-recipe or import another plans module's private name."""
+recipe, a long SQL fragment or a constant, or import another plans
+module's private name. Queries live by domain: no plans module is
+named after the round that added it, and no module binds a name twice."""
 
 import ast
 import math
 import os
 import pathlib
+import re
 import sys
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -185,6 +188,14 @@ COLUMN_CASES = [
         SELECT r, c, {R.PHI2_CELL_SQL} FROM m""",
     ),
     (
+        "pois_case",
+        lambda s, d: load_table(s, d, "orders").select(
+            "o_orderkey", R.pois_case(F.col("o_orderkey") * 7919 % 65536)
+        ),
+        f"SELECT o_orderkey, {R.pois_case_sql('o_orderkey * 7919 % 65536')}"
+        " FROM orders",
+    ),
+    (
         "ncdf_sql",
         lambda s, d: load_table(s, d, "orders").select(
             "o_orderkey",
@@ -219,6 +230,11 @@ TABLE_CASES = [
     ("event_daily_xq", lambda s, d: R.event_daily_xq(s, d), R.EVENT_DAILY_XQ_SQL),
     ("daily_scaled", lambda s, d: R.daily_scaled(s, d), R.DAILY_SCALED_SQL),
     ("daily_q6", lambda s, d: R.daily_q6(s, d), R.DAILY_Q6_SQL),
+    (
+        "cusum_changepoint",
+        lambda s, d: R.cusum_changepoint(R.event_daily_xq(s, d)),
+        R.CUSUM_CHANGEPOINT_SQL,
+    ),
     (
         "tokens",
         lambda s, d: R.tokens(load_table(s, d, "documents")),
@@ -410,3 +426,75 @@ def test_loops_materialize_only_through_iterate():
                 and n.func.attr in calls
             }
     assert not bad, sorted(bad)
+
+
+def _bindings(node):
+    """Names a module-level statement binds."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return [(a.asname or a.name).split(".")[0] for a in node.names]
+    targets = node.targets if isinstance(node, ast.Assign) else []
+    if isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+        targets = [node.target]
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def test_module_names_bound_once():
+    """A later binding silently replaces an earlier one (two queries'
+    helpers concatenated into one module, a patched constant), so each
+    module-level name in plans/ and tests/ is bound exactly once."""
+    bad = []
+    for p in _plans_modules() + sorted((REPO / "tests").glob("*.py")):
+        seen = set()
+        for node in ast.parse(p.read_text()).body:
+            for name in _bindings(node):
+                if name in seen:
+                    bad.append(f"{p.relative_to(REPO)}:{node.lineno} {name}")
+                seen.add(name)
+    assert not bad, bad
+
+
+def test_no_twin_fragments_across_plans_modules():
+    """A SQL literal of 120+ characters (whitespace-normalised) or a
+    module-level tuple/str constant lives in one plans module; a second
+    module imports it from plans/recipes.py instead of restating it,
+    whole or inside a longer literal."""
+    literals, consts = {}, {}
+    for p in _plans_modules():
+        tree = ast.parse(p.read_text())
+        literals[p.name] = [
+            " ".join(node.value.split())
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        ]
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                try:
+                    value = ast.literal_eval(node.value)
+                except ValueError:
+                    continue
+                if isinstance(value, (tuple, str)):
+                    consts.setdefault(repr(value), set()).add(p.name)
+    blobs = {name: "\0".join(texts) for name, texts in literals.items()}
+    twins = sorted(
+        (name, other, text[:80])
+        for name, texts in literals.items()
+        for text in {t for t in texts if len(t) >= 120}
+        for other, blob in blobs.items()
+        if other != name and text in blob
+    )
+    twins += sorted((v[:80], sorted(m)) for v, m in consts.items() if len(m) > 1)
+    assert not twins, twins
+
+
+def test_no_round_modules():
+    """Queries live in their domain's plans module, not in a module
+    named after the round that added them. Test modules keep their
+    names: a test's id includes its module, so moving a test renames it."""
+    found = [
+        str(p.relative_to(REPO))
+        for p in (PKG / "plans").glob("*.py")
+        if re.search(r"round\d", p.stem)
+    ]
+    assert not found, found

@@ -4,21 +4,11 @@ INDEPENDENT formulation (numpy float64, no floor-scaling, no shared SQL
 fragments) so a formula bug shared between the Spark build and the
 DuckDB oracle cannot hide."""
 
-import duckdb
 import numpy as np
 import pytest
 
 from finance_etl_spark import plans
-
-SF = "/root/testdata/sf0.001"
-
-
-def _fetch(sql: str):
-    con = duckdb.connect()
-    try:
-        return con.execute(sql).fetchall()
-    finally:
-        con.close()
+from refs import SF, _fetch
 
 
 def test_mcnemar_matches_reference(spark):

@@ -4,46 +4,11 @@ INDEPENDENT formulation (numpy float64 ranks, no floor-scaling, no
 shared SQL fragments) so a formula bug shared between the Spark build
 and the DuckDB oracle cannot hide."""
 
-import duckdb
 import numpy as np
 import pytest
 
 from finance_etl_spark import plans
-
-SF = "/root/testdata/sf0.001"
-
-
-def _fetch(sql: str):
-    con = duckdb.connect()
-    try:
-        return con.execute(sql).fetchall()
-    finally:
-        con.close()
-
-
-def _midranks(values: np.ndarray) -> np.ndarray:
-    """Average ranks (1-based) with ties — rankdata('average')."""
-    order = np.argsort(values, kind="mergesort")
-    ranks = np.empty(len(values), dtype=np.float64)
-    sv = values[order]
-    i = 0
-    while i < len(sv):
-        j = i
-        while j + 1 < len(sv) and sv[j + 1] == sv[i]:
-            j += 1
-        ranks[order[i : j + 1]] = (i + j) / 2 + 1
-        i = j + 1
-    return ranks
-
-
-def _seg_daily_py():
-    return _fetch(
-        "SELECT c.c_mktsegment, CAST(o.o_orderdate AS DATE),"
-        " SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))"
-        f" FROM read_parquet('{SF}/orders.parquet') o"
-        f" JOIN read_parquet('{SF}/customer.parquet') c"
-        " ON o.o_custkey = c.c_custkey GROUP BY 1, 2"
-    )
+from refs import SF, _fetch, _midranks, _seg_daily_py
 
 
 def _two_sample_py():

@@ -6,20 +6,10 @@ DuckDB oracle cannot hide."""
 
 import hashlib
 
-import duckdb
 import numpy as np
 
 from finance_etl_spark import plans
-
-SF = "/root/testdata/sf0.001"
-
-
-def _fetch(sql: str):
-    con = duckdb.connect()
-    try:
-        return con.execute(sql).fetchall()
-    finally:
-        con.close()
+from refs import SF, _fetch
 
 
 def _docs_py():

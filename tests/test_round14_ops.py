@@ -9,27 +9,10 @@ import re
 from collections import Counter, defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
-import duckdb
 import numpy as np
 
 from finance_etl_spark import plans
-
-SF = "/root/testdata/sf0.001"
-
-
-def _fetch(sql: str):
-    con = duckdb.connect()
-    try:
-        return con.execute(sql).fetchall()
-    finally:
-        con.close()
-
-
-def _docs():
-    return _fetch(
-        "SELECT doc_id, text, lang, source"
-        f" FROM read_parquet('{SF}/documents.parquet')"
-    )
+from refs import SF, _docs, _fetch, _midranks
 
 
 _TOK = re.compile(r"[A-Za-z0-9_]+")
@@ -64,25 +47,6 @@ class TestCliffsDelta:
         assert (row.n_gt, row.n_lt) == (gt, lt)
         assert abs(row.cliffs_delta - delta) < 1e-12
         assert -1.0 <= row.cliffs_delta <= 1.0
-
-
-def _midranks(values):
-    """Average (mid) ranks, 1-based, plain-Python."""
-    order = sorted(range(len(values)), key=lambda i: values[i])
-    ranks = [0.0] * len(values)
-    i = 0
-    while i < len(values):
-        j = i
-        while (
-            j + 1 < len(values)
-            and values[order[j + 1]] == values[order[i]]
-        ):
-            j += 1
-        avg = (i + 1 + j + 1) / 2.0
-        for k in range(i, j + 1):
-            ranks[order[k]] = avg
-        i = j + 1
-    return ranks
 
 
 class TestDunnPosthoc:

@@ -8,33 +8,16 @@ import math
 import re
 from collections import Counter, defaultdict
 
-import duckdb
 import numpy as np
 
 from finance_etl_spark import plans
-
-SF = "/root/testdata/sf0.001"
-
-
-def _fetch(sql: str):
-    con = duckdb.connect()
-    try:
-        return con.execute(sql).fetchall()
-    finally:
-        con.close()
+from refs import SF, _docs, _fetch, _midranks, _trade_graph_py
 
 
 def _orders():
     return _fetch(
         "SELECT o_orderpriority, o_totalprice, o_custkey, o_orderdate"
         f" FROM read_parquet('{SF}/orders.parquet')"
-    )
-
-
-def _docs():
-    return _fetch(
-        "SELECT doc_id, text, lang, source"
-        f" FROM read_parquet('{SF}/documents.parquet')"
     )
 
 
@@ -50,25 +33,6 @@ def _daily_by_type():
     return {
         et: sorted(days.items()) for et, days in acc.items()
     }
-
-
-def _midranks(values):
-    """Average (mid) ranks, 1-based, plain-Python."""
-    order = sorted(range(len(values)), key=lambda i: values[i])
-    ranks = [0.0] * len(values)
-    i = 0
-    while i < len(values):
-        j = i
-        while (
-            j + 1 < len(values)
-            and values[order[j + 1]] == values[order[i]]
-        ):
-            j += 1
-        avg = (i + 1 + j + 1) / 2.0
-        for k in range(i, j + 1):
-            ranks[order[k]] = avg
-        i = j + 1
-    return ranks
 
 
 class TestMoodsMedian:
@@ -422,40 +386,6 @@ class TestBalancedAccuracy:
             if tp + fn > 0 and tn + fp > 0:
                 bacc = (tp / (tp + fn) + tn / (tn + fp)) / 2
                 assert abs(r.balanced_accuracy - bacc) < 1e-12
-
-
-def _trade_graph_py():
-    """Rebuild the 60th-percentile strong-trade edge set in python."""
-    li = _fetch(
-        "SELECT l_orderkey, l_suppkey"
-        f" FROM read_parquet('{SF}/lineitem.parquet')"
-    )
-    orders = dict(
-        _fetch(
-            "SELECT o_orderkey, o_custkey"
-            f" FROM read_parquet('{SF}/orders.parquet')"
-        )
-    )
-    cust = dict(
-        _fetch(
-            "SELECT c_custkey, c_nationkey"
-            f" FROM read_parquet('{SF}/customer.parquet')"
-        )
-    )
-    supp = dict(
-        _fetch(
-            "SELECT s_suppkey, s_nationkey"
-            f" FROM read_parquet('{SF}/supplier.parquet')"
-        )
-    )
-    w = Counter()
-    for ok, sk in li:
-        src = supp[sk]
-        dst = cust[orders[ok]]
-        if src != dst:
-            w[(min(src, dst), max(src, dst))] += 1
-    thr = float(np.percentile(sorted(w.values()), 60))
-    return {e for e, c in w.items() if c >= thr}
 
 
 class TestCommonNeighbors:

@@ -6,21 +6,11 @@ DuckDB oracle cannot hide (the _GINI lesson)."""
 
 import math
 
-import duckdb
 import numpy as np
 import pytest
 
 from finance_etl_spark import plans
-
-SF = "/root/testdata/sf0.001"
-
-
-def _fetch(sql: str):
-    con = duckdb.connect()
-    try:
-        return con.execute(sql).fetchall()
-    finally:
-        con.close()
+from refs import SF, _fetch
 
 
 @pytest.fixture(scope="module")
