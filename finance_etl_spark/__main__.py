@@ -18,14 +18,18 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
+
+TESTDATA = Path(__file__).resolve().parents[2] / "testdata"
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="finance_etl_spark")
     ap.add_argument("query", nargs="?", help="registered query name")
     ap.add_argument(
-        "sf_dir", nargs="?", default="/root/testdata/sf0.01",
-        help="data directory with the parquet tables",
+        "sf_dir", nargs="?", default=str(TESTDATA / "sf0.01"),
+        help="data directory with the parquet tables (default: testdata/sf0.01 "
+        "next to the repository)",
     )
     ap.add_argument("--limit", type=int, default=20, help="rows to show")
     ap.add_argument(

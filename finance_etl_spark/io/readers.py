@@ -75,24 +75,35 @@ _FOOTER_CLASSES = (
 )
 
 
+# The names Spark's partition discovery reads: visible names (``k=v``
+# directories among them) and ``_k=v`` directories. Hidden files
+# (``_SUCCESS``, ``_metadata``, ``.crc`` files) do not match.
+_DATA_NAMES = "{[^_.]*,_*=*}"
+
+
 def _first_data_file(hconf, path):
-    """``path`` itself if it is a file, else the first visible file under
-    it in name order, searched depth-first through ``k=v`` directories;
-    None if there is none (or ``path`` does not exist). Hidden names
-    (``_SUCCESS``, ``_metadata``, ``.crc`` files) are skipped."""
+    """``path`` itself if it is a file, else the first data file under
+    it in name order, searched depth-first through ``k=v`` (and ``_k=v``)
+    directories; None if there is none (or ``path`` does not exist).
+
+    One ``globStatus`` per level lists the candidate names, sorted by
+    name, so the number of py4j calls does not grow with the number of
+    entries: only the candidates before the answer are inspected, and
+    those are the rare visible non-partition directories and ``_k=v``
+    files."""
     fs = path.getFileSystem(hconf)
     if not fs.exists(path):
         return None
     if not fs.getFileStatus(path).isDirectory():
         return path
-    for st in sorted(fs.listStatus(path), key=lambda s: s.getPath().getName()):
+    for st in fs.globStatus(path.suffix("/" + _DATA_NAMES)):
         name = st.getPath().getName()
         if st.isDirectory():
-            if "=" in name and not name.startswith("."):
+            if "=" in name:
                 found = _first_data_file(hconf, st.getPath())
                 if found is not None:
                     return found
-        elif not name.startswith(("_", ".")):
+        elif not name.startswith("_"):
             return st.getPath()
     return None
 

@@ -26,7 +26,10 @@ def read_existing_keys(
 ) -> DataFrame | None:
     """D1: key scan with projection pushdown — only the key column is
     read from the sink (column pruning reaches the parquet reader).
-    The schema comes from one footer, so the scan launches no job.
+    The schema comes from one footer, so the scan launches no job, and
+    that footer is found with one listing per directory level
+    (``io.readers._first_data_file``), so building the scan makes the
+    same number of py4j calls however many appends the sink holds.
 
     Returns None only when the sink does not exist yet or holds no data
     file. Any other failure (an unreadable or corrupt part file) raises:

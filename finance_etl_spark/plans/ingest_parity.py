@@ -19,7 +19,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.keys import surrogate_key
+from finance_etl_spark.functions.keys import surrogate_key, surrogate_key_sql
 from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.ingest import load_config, read_group, run_ingest, transform_group
 from finance_etl_spark.io.readers import load_table
@@ -56,8 +56,7 @@ def _sql_raw(cfg) -> str:
 
 
 def _sql_key(cols) -> str:
-    parts = ", ".join(f"coalesce(\"{c}\", 'nan')" for c in cols)
-    return f"md5(concat_ws('#', {parts}))"
+    return surrogate_key_sql(cols, quote=lambda c: f'"{c}"')
 
 
 def _sql_case(d: dict, key_col: str) -> str:
@@ -988,7 +987,7 @@ def sink_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUOTED_CSV = "/root/repo/fixtures/ingest/delta_current_stm_20250105.csv"
+_QUOTED_CSV = f"{FIX_DIR}/delta_current_stm_20250105.csv"
 
 
 @register(
@@ -1130,7 +1129,7 @@ def ingest_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GZ_DIR = "/root/repo/fixtures/ingest_gz"
+_GZ_DIR = str(REPO_ROOT / "fixtures" / "ingest_gz")
 
 
 @register(

@@ -10,7 +10,10 @@ session's ANSI mode.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -116,3 +119,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return configure(spark)
+
+
+@contextlib.contextmanager
+def count_py4j_calls() -> Iterator[list[int]]:
+    """Count the py4j round trips the driver makes inside the block, from
+    every thread: ``with count_py4j_calls() as n: ...`` leaves the count
+    in ``n[0]``. Wraps ``ClientServerConnection.send_command``, the
+    transport of PySpark's default pinned-thread mode, so every call to
+    the JVM (a method, a field, an object freed) counts once."""
+    from py4j.clientserver import ClientServerConnection
+
+    n = [0]
+    lock = threading.Lock()
+    send = ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        with lock:
+            n[0] += 1
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield n
+    finally:
+        ClientServerConnection.send_command = send

@@ -1,5 +1,7 @@
 """DDL (X1-X3), parquet sink (D1-D4), and the UDF/UDTF API surfaces."""
 
+import gc
+
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Row
@@ -8,6 +10,7 @@ from pyspark.sql import functions as F
 from finance_etl_spark.io.ddl import build_schema, recreate_tables
 from finance_etl_spark.io.sinks import append_new_records, read_existing_keys
 from finance_etl_spark.operators.incremental import with_surrogate_key
+from finance_etl_spark.session import count_py4j_calls
 
 FIELDS = {
     "surrogate_key": {"type": "String", "nullable": False},
@@ -84,6 +87,34 @@ def test_append_contract(spark, tmp_path, count_jobs):
     assert append_new_records(batch(0, 130), sink) == 0  # zero-new re-run
     assert rows_and_keys() == (130, 130)
     assert read_existing_keys(spark, sink).count() == 130
+
+
+def test_key_scan_py4j_calls_do_not_grow_with_the_sink(spark, tmp_path):
+    """The scan finds its footer with one listing per directory level,
+    so a sink of 12 appends costs the driver what a sink of 2 does."""
+
+    def sink(appends):
+        path = str(tmp_path / f"sink{appends}")
+        for i in range(appends):
+            batch = spark.range(100 * i, 100 * (i + 1), numPartitions=2)
+            append_new_records(
+                with_surrogate_key(batch.selectExpr("CAST(id AS STRING) AS a"), ["a"]),
+                path,
+            )
+        return path
+
+    def calls(path):  # py4j frees of unrelated proxies only ever add calls
+        counts = []
+        for _ in range(3):
+            gc.collect()
+            with count_py4j_calls() as n:
+                read_existing_keys(spark, path)
+            counts.append(n[0])
+        return min(counts)
+
+    small, large = sink(2), sink(12)
+    assert calls(small) == calls(large)
+    assert read_existing_keys(spark, large).count() == 1200
 
 
 def test_corrupt_sink_raises_instead_of_rewriting(spark, tmp_path):

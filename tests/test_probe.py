@@ -41,6 +41,7 @@ def test_time_reports_build_sink_split_and_jobs(run):
     assert rec["query"] == "q1_pricing_summary"
     assert rec["build_s"] > 0 and rec["sink_s"] > 0
     assert rec["total_s"] == pytest.approx(rec["build_s"] + rec["sink_s"], abs=2e-3)
+    assert rec["build_py4j_calls"] > 0
     assert rec["eager_jobs"] >= 0 and rec["sink_jobs"] >= 1
     assert rec["stages"] >= rec["sink_jobs"]
     assert rec["cached_bytes_left"] == 0

@@ -11,8 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from py4j.java_gateway import JavaClass
+
 from finance_etl_spark.io.readers import (
     TABLES,
+    _first_data_file,
     load_table,
     normalize_event_ts,
     parquet_schema,
@@ -97,6 +100,46 @@ def test_missing_path_raises_file_not_found(spark, tmp_path):
     (tmp_path / "empty.parquet" / "_SUCCESS").write_bytes(b"")
     with pytest.raises(FileNotFoundError):
         parquet_schema(spark, str(tmp_path / "empty.parquet"))
+
+
+def _first_listed(d):
+    """The footer file as the name-sorted directory listing picks it:
+    descend into ``k=v`` and ``_k=v`` directories, skip other names that
+    start with ``_`` or ``.``."""
+    for name in sorted(os.listdir(d)):
+        p = os.path.join(d, name)
+        if os.path.isdir(p):
+            if "=" in name and not name.startswith("."):
+                found = _first_listed(p)
+                if found is not None:
+                    return found
+        elif not name.startswith(("_", ".")):
+            return p
+    return None
+
+
+@pytest.mark.parametrize(
+    "layout, want",
+    [
+        (["_SUCCESS", ".part-0.parquet.crc", "_k=1/part-0.parquet", "k=2/part-0.parquet",
+          "part-1.parquet"], "_k=1/part-0.parquet"),
+        (["_SUCCESS", "_k=1/_SUCCESS", "_k=1/.x.crc", "k=2/.part-0.parquet.crc",
+          "k=2/part-0.parquet", "part-1.parquet"], "k=2/part-0.parquet"),
+        (["_x=1.parquet", ".k=0/part-0.parquet", "a/part-0.parquet", "k=1/d=2/p.parquet",
+          "k=1/q.parquet"], "k=1/d=2/p.parquet"),
+        (["_SUCCESS", "_k=1/_SUCCESS", "sub/part-0.parquet"], None),
+    ],
+    ids=["hidden-then-_k=v", "empty-_k=v", "nested", "none"],
+)
+def test_first_data_file_choice(spark, tmp_path, layout, want):
+    for rel in layout:
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"x")
+    Path = JavaClass("org.apache.hadoop.fs.Path", spark.sparkContext._gateway._gateway_client)
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    got = _first_data_file(hconf, Path(str(tmp_path)))
+    want = want and str(tmp_path / want)
+    assert (got and got.toUri().getPath()) == want == _first_listed(str(tmp_path))
 
 
 def test_load_table_launches_no_job(spark, sf_dir):

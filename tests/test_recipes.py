@@ -498,3 +498,17 @@ def test_no_round_modules():
         if re.search(r"round\d", p.stem)
     ]
     assert not found, found
+
+
+def test_no_machine_paths_in_package():
+    """Paths into the repository derive from the module's location, so
+    the package runs from any checkout."""
+    bad = [
+        f"{p.relative_to(REPO)}:{node.lineno} {node.value[:60]!r}"
+        for p in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("/root/")
+    ]
+    assert not bad, bad

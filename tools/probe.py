@@ -15,7 +15,8 @@ time   Warms each query once, then runs it N times (default 3): build (the
        Python/py4j plan build, eager jobs included), then a noop sink, each
        inside a ``perfbench/spans.py`` Tracer span, measuring the bytes the
        query left cached and clearing the cache after every run. Reports the
-       best run (least build+sink): build/sink seconds, eager vs sink jobs,
+       best run (least build+sink): build/sink seconds, the build's py4j
+       round trips (``build_py4j_calls``), eager vs sink jobs,
        stages, tasks, executor run/CPU/GC time, input, shuffle and spill
        bytes, cached bytes left before ``clearCache()``, the persistent
        RDDs (count and bytes) the run still left after it, and every
@@ -71,7 +72,7 @@ from bench import SF_DIR as BENCH_SF_DIR  # noqa: E402
 from check import rows_to_multiset  # noqa: E402
 from finance_etl_spark import plans  # noqa: E402
 from finance_etl_spark.io.readers import TABLES, load_table  # noqa: E402
-from finance_etl_spark.session import get_spark  # noqa: E402
+from finance_etl_spark.session import count_py4j_calls, get_spark  # noqa: E402
 from spans import STAGE_FIELDS, Tracer  # noqa: E402
 
 RUNS = {"time": 3, "ab": 6, "scale": 2}
@@ -138,7 +139,8 @@ def run_once(spark, name: str, build, sf_dir: str) -> dict:
     cached_before = tr.cached_bytes()
     rdds_before = persistent_rdds(spark)
     with tr.span("build", op=name) as b:
-        df = build(spark, sf_dir)
+        with count_py4j_calls() as calls:
+            df = build(spark, sf_dir)
     with tr.span("sink", op=name) as s:
         df.write.mode("overwrite").format("noop").save()
     build_s, sink_s = b["end"] - b["start"], s["end"] - s["start"]
@@ -146,6 +148,7 @@ def run_once(spark, name: str, build, sf_dir: str) -> dict:
         "build_s": build_s,
         "sink_s": sink_s,
         "total_s": build_s + sink_s,
+        "build_py4j_calls": calls[0],
         "eager_jobs": b["jobs"],
         "sink_jobs": s["jobs"],
         **{k: b[k] + s[k] for k in ("stages", "tasks", *STAGE_FIELDS)},
