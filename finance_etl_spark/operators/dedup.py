@@ -362,9 +362,9 @@ def ngram_pair_counts(
     the pair-count agg integer-keyed (64-bit collisions are ~1e-11
     at billion-shingle vocabularies; callers needing certified-exact
     counts can re-verify survivors on strings). The exploded hashed
-    relation feeds three consumers (df filter, index, self-join) and
-    is persisted so the tokenize+gram lineage runs once; the unpersist
-    is left to job end since consumers execute lazily.
+    relation feeds three consumers (df filter, index, self-join); it
+    re-explodes the persisted shingle ARRAY per consumer, which
+    measured faster at sf0.1 than persisting the exploded rows too.
 
     Formulation note (measured at sf0.1): the hash is applied AFTER the
     explode, as a plain row projection — whole-stage-codegen'd xxhash64
@@ -383,7 +383,6 @@ def ngram_pair_counts(
     sh = (
         arr.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
         .select(F.col(id_col), F.xxhash64("shingle").alias("h"))
-        .persist()
     )
     rare = (
         sh.groupBy("h")

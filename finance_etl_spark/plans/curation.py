@@ -41,7 +41,7 @@ from finance_etl_spark.plans.recipes import (
     trade_edges_undirected,
     trade_pairs,
 )
-from finance_etl_spark.plans.registry import get, register
+from finance_etl_spark.plans.registry import get, register, scratch_dir
 
 
 @register(
@@ -403,10 +403,6 @@ def cur_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection) — the contamination counts are countDistinct over the
     # join key, so the narrower key shrinks both shuffles (index
     # df-filter + train⋈test)
-    # the hashed shingle relation feeds the df-filter AND the index,
-    # and the index feeds BOTH join sides — persist the root or the
-    # tokenize+gram lineage re-runs per consumer (the same measured
-    # pattern as operators/dedup.py::ngram_pair_counts)
     # persist the ARRAY root BEFORE the explode: exploding the
     # unmaterialized computed array re-evaluates the gram-build
     # expression per generated row (measured 11.9 s vs 2.8 s at sf0.1
@@ -417,7 +413,6 @@ def cur_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         arr.select("doc_id", F.explode("sh_arr").alias("s"))
         .select("doc_id", F.xxhash64("s").alias("shingle"))
-        .persist()
     )
     rare = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= 50
@@ -710,8 +705,6 @@ def cur_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes from scratch). At 100 TB this is the difference
     between scanning the day's increment and re-scanning three years
     of base data on every refresh."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.date_trunc("day", "ts").cast("date").alias("day"),
@@ -724,7 +717,7 @@ def cur_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"), F.sum("dv").alias("dec_total")
         )
 
-    mv_path = tempfile.mkdtemp(prefix="agg_mv_")
+    mv_path = scratch_dir("agg_mv_")
     partials(ev.filter(F.col("day") < cut)).write.mode("overwrite").parquet(mv_path)
 
     stored = spark.read.parquet(mv_path)
@@ -1793,8 +1786,6 @@ def cur_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     the base), not O(|base|²-ish full re-join), and every term joins
     on the same l_orderkey=o_orderkey key, so one co-partitioning
     serves all three."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
@@ -1834,7 +1825,7 @@ def cur_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    mv_path = tempfile.mkdtemp(prefix="join_mv_")
+    mv_path = scratch_dir("join_mv_")
     partials(o0, l0).write.mode("overwrite").parquet(mv_path)
 
     stored = spark.read.parquet(mv_path)
@@ -3078,10 +3069,8 @@ def cur_e2e_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor), (4) round-robin interleave (order by (per-lang rank,
     lang)) so no language is clumped — the curriculum-friendly
     emission order. The quality filter pushes below the dedup window
-    and columns prune to the five consumed; the post-dedup slim
-    projection is persisted once so the quota aggregate and the main
-    chain share a single materialization, the quota broadcasts back as
-    one row, and the global interleave position is the two-phase
+    and columns prune to the five consumed; the quota broadcasts back
+    as one row, and the global interleave position is the two-phase
     range-partitioned rank — no unpartitioned window ever sees a
     corpus-scale relation. Everything is integer/string-exact; the one
     float (stop ratio) only gates."""
@@ -3118,11 +3107,6 @@ def cur_e2e_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min(...).over(Window.partitionBy()) — an unpartitioned window
     # funnels every surviving doc through ONE task (the repo-wide rule:
     # unpartitioned windows only over already-aggregated relations).
-    # `deduped` is persisted (slim 3-column projection) so the quota
-    # branch and the main chain read ONE materialization instead of
-    # re-deriving the quality→dedup scan per branch — the round-5
-    # 4×-scan trap the earlier window variant was dodging.
-    deduped = deduped.persist()
     lang_counts = deduped.groupBy("lang").agg(
         F.count(F.lit(1)).alias("lang_n")
     )
@@ -3224,7 +3208,7 @@ def cur_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.sqrt(F.col("n_docs").cast("double")) * F.lit(1e6)).cast(
             "decimal(38,0)"
         ),
-    ).persist()  # domain-sized; feeds the totals AND the final join
+    )
     tot = per_dom.agg(
         F.sum("n_docs").alias("total_docs"), F.sum("wq").alias("total_wq")
     )
@@ -3305,7 +3289,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .persist()  # edge set feeds both degree aggs AND the final join
     )
     dc = e.groupBy("c").agg(F.count(F.lit(1)).alias("dc"))
     ds = e.groupBy("s").agg(F.count(F.lit(1)).alias("ds"))
@@ -3414,7 +3397,6 @@ def cur_epoch_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "decimal(38,0)"
             ),
         )
-        .persist()
     )
     tot = per_dom.agg(F.sum("wq").alias("total_wq"))
     budgets = per_dom.crossJoin(F.broadcast(tot)).select(
@@ -3542,12 +3524,8 @@ def cur_pretrain_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
-    # two-level exclusive prefix sum over doc_id order. Persist the
-    # (bkt, doc_id, n_tok) relation: both levels consume it, and
-    # without the cache each one re-scans AND re-tokenizes the full
-    # text column (the expensive part) — the cached form is three
-    # numeric columns, orders of magnitude narrower than the corpus.
-    toks = toks.withColumn("bkt", F.expr("doc_id DIV 4096")).persist()
+    # two-level exclusive prefix sum over doc_id order
+    toks = toks.withColumn("bkt", F.expr("doc_id DIV 4096"))
     w_in = (
         Window.partitionBy("bkt")
         .orderBy("doc_id")
@@ -4201,15 +4179,8 @@ def cur_rejection_sample_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_reciprocity",
     tags=("graph", "agg"),
-    oracle="""
-        WITH e AS MATERIALIZED (
-            SELECT DISTINCT s.s_nationkey AS src, c.c_nationkey AS dst
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            WHERE s.s_nationkey <> c.c_nationkey
-        ),
+    oracle=f"""
+        WITH e AS MATERIALIZED ({_BFS_EDGES_SQL}),
         thr AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM e
         ),
@@ -4243,7 +4214,6 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .distinct()
-        .persist()
     )
     n_edges = e.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     b = e.select(F.col("src").alias("bsrc"), F.col("dst").alias("bdst"))
@@ -5230,7 +5200,6 @@ def graph_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
         u.crossJoin(F.broadcast(thr))
         .filter(F.col("w") >= F.col("t"))
         .select("a", "b")
-        .persist()
     )
     adj = ku.select(F.col("a").alias("node"), F.col("b").alias("nb")).unionByName(
         ku.select(F.col("b").alias("node"), F.col("a").alias("nb"))
@@ -5444,7 +5413,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT count. Same corpus-relative 60th-percentile edge set as
     the other round-9+ graph queries; corpus work is the one
     edge-build scan, graph state is nation-bounded."""
-    g = trade_edges_undirected(spark, sf_dir).persist()
+    g = trade_edges_undirected(spark, sf_dir)
     nbr = g.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
         g.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )

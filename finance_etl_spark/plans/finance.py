@@ -2756,7 +2756,7 @@ def fin_capm_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     series and all windows live on O(days) calendar-bounded rows (the
     unpartitioned market lag window is a ~730-row relation, never the
     corpus)."""
-    daily = seg_daily(spark, sf_dir).persist()
+    daily = seg_daily(spark, sf_dir)
     s = market_model_sums(daily)
     n_d = F.col("n").cast("double")
     sr_d = F.col("sr").cast("double")
@@ -3067,7 +3067,7 @@ def fin_calmar_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression (a never-drawn-down segment NULLs via the same CASE on
     both engines). Corpus work: one broadcast-join daily agg; windows
     per segment over calendar-bounded rows."""
-    daily = seg_pnl_daily(spark, sf_dir).persist()
+    daily = seg_pnl_daily(spark, sf_dir)
     w = Window.partitionBy("segment").orderBy("d").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -3280,7 +3280,7 @@ def fin_tracking_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a segment that IS the market — NULLs both on both engines).
     Scale: same one-daily-agg + calendar-bounded-window shape as
     fin_sharpe_sortino."""
-    daily = seg_daily(spark, sf_dir).persist()
+    daily = seg_daily(spark, sf_dir)
     rs = seg_returns(daily)
     rm = mkt_returns(daily)
     act = rs.join(F.broadcast(rm), "d").select(
@@ -4157,7 +4157,7 @@ def fin_treynor_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta-zero guard compares the covariance numerator, which is exact
     before the one double division). Corpus work: one broadcast-join
     daily agg; everything after is calendar-bounded."""
-    daily = seg_daily(spark, sf_dir).persist()
+    daily = seg_daily(spark, sf_dir)
     s = market_model_sums(daily)
     n_d = F.col("n").cast("double")
     sr_d = F.col("sr").cast("double")
@@ -4246,7 +4246,6 @@ def fin_active_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ys = daily.groupBy(
         F.year("d").alias("y"), "segment"
     ).agg(F.sum("x").cast("decimal(18,2)").alias("xs"))
-    ys = ys.persist()  # grid-sized; feeds all three rollups
     yt = ys.groupBy("y").agg(F.sum("xs").cast("decimal(18,2)").alias("xy"))
     bs = ys.groupBy("segment").agg(
         F.sum("xs").cast("decimal(18,2)").alias("xb")
@@ -4340,7 +4339,7 @@ def fin_capture_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer <> 0 guard). Corpus work is the shared broadcast-join
     daily agg; the conditional sums ride the calendar-bounded joined
     return relation."""
-    daily = seg_daily(spark, sf_dir).persist()
+    daily = seg_daily(spark, sf_dir)
     rs = seg_returns(daily)
     rm = mkt_returns(daily)
     up = F.col("m") > 0
@@ -5420,7 +5419,7 @@ def fin_kupiec_pof(spark: SparkSession, sf_dir: str) -> DataFrame:
     value (string-routed). Per-segment windows ride O(days) rows."""
 
     daily = seg_daily(spark, sf_dir)
-    ret = seg_returns(daily).persist()
+    ret = seg_returns(daily)
     cut = F.lit("1998-01-01").cast("date")
     est = ret.filter(F.col("d") < cut)
     wr = Window.partitionBy("segment").orderBy("r", "d")
@@ -5750,7 +5749,7 @@ def fin_jensen_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to fin_capm_beta: corpus work is the daily agg; all
     windows on calendar-bounded rows; market series broadcast."""
     rf_d = 0.03 / 365  # 8.219178082191781e-05, literal-twinned above
-    daily = seg_daily(spark, sf_dir).persist()
+    daily = seg_daily(spark, sf_dir)
     s = market_model_sums(daily)
     n_d = F.col("n").cast("double")
     sr_d = F.col("sr").cast("double")

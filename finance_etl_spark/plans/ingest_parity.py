@@ -23,7 +23,7 @@ from finance_etl_spark.functions.keys import surrogate_key, surrogate_key_sql
 from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.ingest import load_config, read_group, run_ingest, transform_group
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, scratch_dir
 
 REPO_ROOT = Path(__file__).resolve().parent.parent.parent
 FIX_DIR = str(REPO_ROOT / "fixtures" / "ingest")
@@ -393,8 +393,6 @@ def ddl_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (db_init.py:20-43), INSERT the region dimension, read
     back by catalog name. External LOCATION (tempdir) so the query is
     independent of the session's warehouse directory."""
-    import tempfile
-
     from finance_etl_spark.io.ddl import recreate_tables
 
     recreate_tables(
@@ -406,7 +404,7 @@ def ddl_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "r_name": {"type": "String", "length": 64},
             }
         },
-        location_root=tempfile.mkdtemp(prefix="ddl_rt_"),
+        location_root=scratch_dir("ddl_rt_"),
     )
     load_table(spark, sf_dir, "region").select("r_regionkey", "r_name").write.mode(
         "append"
@@ -432,10 +430,8 @@ def sink_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     between scanning one day and scanning three years. The probe date
     is resolved driver-side (one MIN — metadata-sized, like the tf-idf
     corpus count)."""
-    import tempfile
-
     e = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="part_sink_")
+    out = scratch_dir("part_sink_")
     e.withColumn("event_date", F.to_date("ts")).write.partitionBy(
         "event_date"
     ).mode("overwrite").parquet(out)
@@ -469,11 +465,10 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import math
     import os
-    import tempfile
 
     target_file_bytes = 8 * 1024 * 1024  # 8 MiB at sf0.01; config at scale
     o = load_table(spark, sf_dir, "orders")
-    frag_dir = tempfile.mkdtemp(prefix="frag_")
+    frag_dir = scratch_dir("frag_")
     o.repartition(64).write.mode("overwrite").parquet(frag_dir)
 
     def _parquet_files(d: str) -> list[str]:
@@ -486,7 +481,7 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic for the oracle; at scale n_target comes from
     # total_bytes alone
     n_target = max(n_target, 4)
-    compact_dir = tempfile.mkdtemp(prefix="compact_")
+    compact_dir = scratch_dir("compact_")
     frag = spark.read.parquet(frag_dir)
     frag.repartition(n_target).write.mode("overwrite").parquet(compact_dir)
 
@@ -624,14 +619,12 @@ def sink_multi_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding parses back bit-identical, which this query proves through
     the differential gate. Both reads are splittable distributed scans;
     the union is a lazy lineage merge, not a materialization."""
-    import tempfile
-
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= 25)
         .select("l_returnflag", "l_quantity", "l_extendedprice")
     )
-    base = tempfile.mkdtemp(prefix="fmt_roundtrip_")
+    base = scratch_dir("fmt_roundtrip_")
     li.write.mode("overwrite").orc(f"{base}/orc")
     li.write.mode("overwrite").json(f"{base}/json")
 
@@ -675,10 +668,8 @@ def ddl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     The aggregate proves both generations coexist: per status, total
     rows, NULL-count from v1 files, and a decimal-exact sum over the
     v2-only column."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="schema_evo_")
+    out = scratch_dir("schema_evo_")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus"
     )
@@ -705,10 +696,8 @@ def ddl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dpp_join(spark: SparkSession, sf_dir: str):
     """(fact, joined) for sink_dynamic_partition_pruning and its plan
     test: date-partitioned events fact joined to a filtered date dim."""
-    import tempfile
-
     e = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="dpp_sink_")
+    out = scratch_dir("dpp_sink_")
     e.withColumn("event_date", F.to_date("ts")).write.partitionBy(
         "event_date"
     ).mode("overwrite").parquet(out)
@@ -772,8 +761,6 @@ def write_zorder_events(spark: SparkSession, sf_dir: str) -> str:
     on EITHER dimension — the multi-dimensional data-skipping layout
     (a single-column sort can only skip on its leading column).
     Returns the output directory."""
-    import tempfile
-
     e = load_table(spark, sf_dir, "events")
     keyed = e.select(
         "event_id",
@@ -784,7 +771,7 @@ def write_zorder_events(spark: SparkSession, sf_dir: str) -> str:
     ).withColumn(
         "z", _zorder_bits(F.col("user_bucket"), F.col("hour_of_day"))
     )
-    out = tempfile.mkdtemp(prefix="zorder_sink_")
+    out = scratch_dir("zorder_sink_")
     (
         keyed.repartitionByRange(ZORDER_N_FILES, "z")
         .sortWithinPartitions("z")
@@ -907,12 +894,10 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     one-day backfill on a 3-year 100 TB table rewrites one day. The
     read-back aggregates per day and the oracle rebuilds the expected
     post-backfill content: day one doubled, the rest intact."""
-    import tempfile
-
     e = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("event_date"), "event_type", "value"
     )
-    out = tempfile.mkdtemp(prefix="dyn_overwrite_")
+    out = scratch_dir("dyn_overwrite_")
     e.write.partitionBy("event_date").mode("overwrite").parquet(out)
 
     first_day = e.agg(F.min("event_date")).collect()[0][0]
@@ -961,8 +946,6 @@ def sink_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     decodes `meta.status` and `fin.price`, not the whole record — on
     a 100 TB corpus with KB-sized records per row that is the
     difference between reading terabytes and reading gigabytes."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders")
     nested = o.select(
         F.struct(
@@ -976,7 +959,7 @@ def sink_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").alias("odate"),
         ).alias("fin"),
     )
-    out = tempfile.mkdtemp(prefix="nested_sink_")
+    out = scratch_dir("nested_sink_")
     nested.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy(F.col("meta.status").alias("status")).agg(
@@ -1224,8 +1207,6 @@ def ingest_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row tag, so reads parallelize like any text source; the
     explicit schema avoids a whole-file inference pass — the same
     schema-on-read discipline as the CSV ingest (S2)."""
-    import tempfile
-
     o = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 7 == 0)
@@ -1235,7 +1216,7 @@ def ingest_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct("o_totalprice", "o_orderpriority").alias("details"),
         )
     )
-    d = tempfile.mkdtemp(prefix="xml_rt_")
+    d = scratch_dir("xml_rt_")
     (
         o.repartition(4)
         .write.format("xml")

@@ -16,8 +16,6 @@ read-back queries therefore quote every column.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,7 +25,7 @@ from finance_etl_spark.operators.incremental import (
     incremental_new_records,
     with_surrogate_key,
 )
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, scratch_dir
 
 DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
@@ -35,7 +33,7 @@ DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 def _fresh_db() -> str:
     """A new embedded-Derby URL per invocation so the append-only sink
     semantics stay idempotent across repeated harness runs."""
-    return f"jdbc:derby:{tempfile.mkdtemp(prefix='derby_')}/db;create=true"
+    return f"jdbc:derby:{scratch_dir('derby_')}/db;create=true"
 
 
 @register(

@@ -257,7 +257,7 @@ def ml_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     same aggregate without the probe filter: vocab x classes rows,
     i.e. model size ∝ vocabulary, never corpus. One token-key shuffle
     + one class-key shuffle at any scale."""
-    toks = _doc_tokens(spark, sf_dir).persist()
+    toks = _doc_tokens(spark, sf_dir)
     cls = toks.groupBy("lang").agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count(F.lit(1)).alias("n_tokens"),
@@ -369,7 +369,7 @@ def ml_naive_bayes_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     of headroom, so the integer matrix is engine- and build-stable.
     tests/test_round6_ops.py additionally pins the full matrix
     against an independent pure-python NB on the same quantization."""
-    toks = _doc_tokens(spark, sf_dir).persist()
+    toks = _doc_tokens(spark, sf_dir)
     cls = toks.groupBy("lang").agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count(F.lit(1)).alias("n_tokens"),
@@ -457,6 +457,25 @@ _OLS_SUMS_SQL = """
 """
 
 
+_OLS_BETAS = {
+    "beta0": (
+        "((s11*s22 - s12*s12)*sy + (s2*s12 - s1*s22)*s1y"
+        " + (s1*s12 - s2*s11)*s2y) / (n*(s11*s22 - s12*s12)"
+        " - s1*(s1*s22 - s2*s12) + s2*(s1*s12 - s2*s11))"
+    ),
+    "beta1": (
+        "((s2*s12 - s1*s22)*sy + (n*s22 - s2*s2)*s1y"
+        " + (s1*s2 - n*s12)*s2y) / (n*(s11*s22 - s12*s12)"
+        " - s1*(s1*s22 - s2*s12) + s2*(s1*s12 - s2*s11))"
+    ),
+    "beta2": (
+        "((s1*s12 - s2*s11)*sy + (s1*s2 - n*s12)*s1y"
+        " + (n*s11 - s1*s1)*s2y) / (n*(s11*s22 - s12*s12)"
+        " - s1*(s1*s22 - s2*s12) + s2*(s1*s12 - s2*s11))"
+    ),
+}
+
+
 @register(
     "ml_ols_normal_equations",
     tags=("ml", "agg"),
@@ -464,18 +483,9 @@ _OLS_SUMS_SQL = """
     oracle=f"""
         WITH s AS ({_OLS_SUMS_SQL})
         SELECT CAST(n AS BIGINT) AS n,
-               ((s11*s22 - s12*s12)*sy + (s2*s12 - s1*s22)*s1y
-                  + (s1*s12 - s2*s11)*s2y)
-               / (n*(s11*s22 - s12*s12) - s1*(s1*s22 - s2*s12)
-                  + s2*(s1*s12 - s2*s11)) AS beta0,
-               ((s2*s12 - s1*s22)*sy + (n*s22 - s2*s2)*s1y
-                  + (s1*s2 - n*s12)*s2y)
-               / (n*(s11*s22 - s12*s12) - s1*(s1*s22 - s2*s12)
-                  + s2*(s1*s12 - s2*s11)) AS beta1,
-               ((s1*s12 - s2*s11)*sy + (s1*s2 - n*s12)*s1y
-                  + (n*s11 - s1*s1)*s2y)
-               / (n*(s11*s22 - s12*s12) - s1*(s1*s22 - s2*s12)
-                  + s2*(s1*s12 - s2*s11)) AS beta2
+               {_OLS_BETAS['beta0']} AS beta0,
+               {_OLS_BETAS['beta1']} AS beta1,
+               {_OLS_BETAS['beta2']} AS beta2
         FROM s
     """,
 )
@@ -640,9 +650,8 @@ def ml_standard_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.col(f)).cast("double").alias(f"{f}__min"),
             F.max(F.col(f)).cast("double").alias(f"{f}__max"),
         ]
-    # ONE scan for all three features; the 1-row result is persisted so
-    # the per-feature unpivot below doesn't re-trigger the scan
-    wide = li.agg(F.count(F.lit(1)).alias("n"), *aggs).persist()
+    # ONE scan for all three features
+    wide = li.agg(F.count(F.lit(1)).alias("n"), *aggs)
     parts = [
         wide.select(
             F.lit(f).alias("feature"),
@@ -837,23 +846,6 @@ def ml_decision_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KF_FOLDS = 5
-_KF_BETAS = {
-    "beta0": (
-        "((s11*s22 - s12*s12)*sy + (s2*s12 - s1*s22)*s1y"
-        " + (s1*s12 - s2*s11)*s2y) / (n*(s11*s22 - s12*s12)"
-        " - s1*(s1*s22 - s2*s12) + s2*(s1*s12 - s2*s11))"
-    ),
-    "beta1": (
-        "((s2*s12 - s1*s22)*sy + (n*s22 - s2*s2)*s1y"
-        " + (s1*s2 - n*s12)*s2y) / (n*(s11*s22 - s12*s12)"
-        " - s1*(s1*s22 - s2*s12) + s2*(s1*s12 - s2*s11))"
-    ),
-    "beta2": (
-        "((s1*s12 - s2*s11)*sy + (s1*s2 - n*s12)*s1y"
-        " + (n*s11 - s1*s1)*s2y) / (n*(s11*s22 - s12*s12)"
-        " - s1*(s1*s22 - s2*s12) + s2*(s1*s12 - s2*s11))"
-    ),
-}
 _KF_STATS = {
     "n": "COUNT(*)",
     "s1": "SUM(x1)", "s2": "SUM(x2)",
@@ -893,9 +885,9 @@ _KF_STATS = {
         scored AS (
             SELECT f.fold,
                    CAST(CAST(f.y AS VARCHAR) AS DOUBLE)
-                     - ({_KF_BETAS['beta0']}
-                        + ({_KF_BETAS['beta1']}) * CAST(CAST(f.x1 AS VARCHAR) AS DOUBLE)
-                        + ({_KF_BETAS['beta2']}) * CAST(CAST(f.x2 AS VARCHAR) AS DOUBLE)) AS resid
+                     - ({_OLS_BETAS['beta0']}
+                        + ({_OLS_BETAS['beta1']}) * CAST(CAST(f.x1 AS VARCHAR) AS DOUBLE)
+                        + ({_OLS_BETAS['beta2']}) * CAST(CAST(f.x2 AS VARCHAR) AS DOUBLE)) AS resid
             FROM feat f JOIN betas b ON b.fold = f.fold
         )
         SELECT fold,
@@ -944,9 +936,9 @@ def ml_kfold_ols_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("y").cast("double")
             - (
-                F.expr(_KF_BETAS["beta0"])
-                + F.expr(f"({_KF_BETAS['beta1']})") * F.col("x1").cast("double")
-                + F.expr(f"({_KF_BETAS['beta2']})") * F.col("x2").cast("double")
+                F.expr(_OLS_BETAS["beta0"])
+                + F.expr(f"({_OLS_BETAS['beta1']})") * F.col("x1").cast("double")
+                + F.expr(f"({_OLS_BETAS['beta2']})") * F.col("x2").cast("double")
             )
         ).alias("resid"),
     )
@@ -1348,9 +1340,9 @@ _RIDGE_LAMBDA = "1000.0"
         )
         SELECT CAST(n AS BIGINT) AS n,
                CAST({_RIDGE_LAMBDA} AS DOUBLE) AS lambda,
-               {_KF_BETAS['beta0']} AS beta0,
-               {_KF_BETAS['beta1']} AS beta1,
-               {_KF_BETAS['beta2']} AS beta2
+               {_OLS_BETAS['beta0']} AS beta0,
+               {_OLS_BETAS['beta1']} AS beta1,
+               {_OLS_BETAS['beta2']} AS beta2
         FROM adj
     """,
 )
@@ -1385,9 +1377,9 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return adj.select(
         F.col("n").cast("bigint").alias("n"),
         F.expr(_RIDGE_LAMBDA).cast("double").alias("lambda"),
-        F.expr(_KF_BETAS["beta0"]).alias("beta0"),
-        F.expr(_KF_BETAS["beta1"]).alias("beta1"),
-        F.expr(_KF_BETAS["beta2"]).alias("beta2"),
+        F.expr(_OLS_BETAS["beta0"]).alias("beta0"),
+        F.expr(_OLS_BETAS["beta1"]).alias("beta1"),
+        F.expr(_OLS_BETAS["beta2"]).alias("beta2"),
     )
 
 
@@ -1452,7 +1444,7 @@ def ml_feature_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(nf)
         for j in range(i, nf)
     ]
-    s = li.agg(*aggs).persist()
+    s = li.agg(*aggs)
     parts = [
         s.select(
             F.lit(_CORR_FEATURES[i]).alias("feature_x"),
@@ -1558,15 +1550,12 @@ def ml_gbdt_boost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
-    # persisted 1-row aggregate: it is consumed by BOTH the residual
-    # histogram and the final presentation row — without the cache the
-    # global-mean scan would run twice (explain-verified)
     g = li.agg(
         F.count(F.lit(1)).cast("double").alias("g_n_d"),
         F.sum(F.col("l_extendedprice").cast("decimal(25,2)"))
         .cast("double")
         .alias("g_sum_d"),
-    ).persist()
+    )
     r = F.col("l_extendedprice").cast("double") - F.expr(_GB_F0)
     def raw(col):  # floor-scaled DECIMAL(38,0) partial (o_fsum recipe)
         return F.sum(F.floor(col * F.lit(1e4)).cast("decimal(38,0)"))
@@ -1757,7 +1746,6 @@ def ml_chi2_feature_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tok"),
         )
         .distinct()
-        .persist()  # consumed by both the cell counts and tok_tot
     )
     n_docs = d.agg(F.countDistinct("doc_id").cast("bigint").alias("n"))
     cls = d.groupBy("lang").agg(
@@ -1983,20 +1971,13 @@ def ml_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("event_type").over(w).alias("prev"),
     ).filter(F.col("prev").isNotNull())
     c = steps.groupBy("prev", "next").agg(F.count(F.lit(1)).alias("cnt"))
-    # states and the completed matrix are model-sized (K and K^2 rows)
-    # but DERIVED from full fact scans — persist both so events is
-    # read exactly twice (steps + distinct), not once per consumer
-    # (unpersisted, this plan scanned events 7x: states feeds the
-    # cross join twice plus k, and matrix feeds rowtot plus the final
-    # join)
-    states = e.select(F.col("event_type").alias("s")).distinct().persist()
+    states = e.select(F.col("event_type").alias("s")).distinct()
     k = states.agg(F.count(F.lit(1)).alias("k"))
     matrix = (
         states.select(F.col("s").alias("prev"))
         .crossJoin(F.broadcast(states.select(F.col("s").alias("next"))))
         .join(c, ["prev", "next"], "left")
         .select("prev", "next", F.coalesce("cnt", F.lit(0)).alias("cnt"))
-        .persist()
     )
     rowtot = matrix.groupBy("prev").agg(F.sum("cnt").alias("tot"))
     return (
@@ -2136,15 +2117,12 @@ def ml_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     from pyspark.sql import Window
 
-    # both 1-row model relations feed TWO consumers each (rng -> the
-    # level-1 and level-2 binned scans; root -> the leaf predicate and
-    # the output row) — persist so each level really is one scan
     rng = li.agg(
         F.min("l_extendedprice").cast("double").alias("mn1"),
         F.max("l_extendedprice").cast("double").alias("mx1"),
         F.min("l_quantity").cast("double").alias("mn2"),
         F.max("l_quantity").cast("double").alias("mx2"),
-    ).persist()
+    )
     binned = (
         li.crossJoin(F.broadcast(rng))
         .select(
@@ -2190,7 +2168,6 @@ def ml_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rk", F.row_number().over(rk1))
         .filter(F.col("rk") == 1)
         .select("f", "bin", "gain", "tot_n", "tot_pos")
-        .persist()
     )
     leaves = binned.crossJoin(F.broadcast(root.select(
         F.col("f").alias("rf"), F.col("bin").alias("rbin")
@@ -2379,7 +2356,7 @@ def ml_gbdt_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("l_extendedprice").cast("decimal(25,2)"))
         .cast("double")
         .alias("g_sum_d"),
-    ).persist()
+    )
 
     def raw(col):
         return F.sum(F.floor(col * F.lit(1e4)).cast("decimal(38,0)"))
@@ -2422,7 +2399,6 @@ def ml_gbdt_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(_GB_SSE_AFTER) / F.col("tot_n").cast("double")
             ).alias("rmse1"),
         )
-        .persist()
     )
     stacked = li.select(
         F.expr(
@@ -2969,7 +2945,6 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bkt",
             F.floor(-F.col("x") / F.lit(10000)).cast("long"),
         )
-        .persist()
     )
     w_in = (
         Window.partitionBy("bkt")
@@ -3548,7 +3523,7 @@ def ml_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     risk = counts.select(
         "seg", "bkt", "d", F.sum("n_b").over(w).cast("bigint").alias("n_risk")
-    ).persist()  # O(segments x 8) rows; joined to itself below
+    )
     a = risk.select(F.col("seg").alias("a_seg"), F.col("bkt").alias("a_bkt"))
     ratio = (F.col("n_risk") - F.col("d")).cast("double") / F.col(
         "n_risk"
@@ -3716,7 +3691,7 @@ def ml_brier_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linestatus").alias("g"),
         (2 * F.col("l_quantity").cast("bigint") - 1).alias("p100"),
         (F.col("l_returnflag") == "R").cast("int").alias("y"),
-    ).persist()  # consumed by the brier and the log-loss bin branches
+    )
     dev = F.col("p100") - 100 * F.col("y")
     brier = scored.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3835,7 +3810,6 @@ def ml_multiclass_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(F.col("o_orderpriority").alias("actual"), pred.alias("pred"))
         .groupBy("actual", "pred")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()  # <=25 rows; consumed by the spine and three sums
     )
     classes = (
         cells.select(F.col("actual").alias("cls"))
@@ -4002,7 +3976,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("y"),
         F.col("l_quantity").cast("bigint").alias("x"),
-    ).persist()  # feeds both global rankings
+    )
     rr = global_row_number(
         lab.select(
             "y", "x", F.md5(F.concat(F.lit("r:"), F.col("k"))).alias("h")
@@ -4018,7 +3992,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("h"), F.col("xp")],
         out_col="fr",
     ).select("xp", "fr")
-    permuted = rr.join(fr, rr["rr"] == fr["fr"]).persist()
+    permuted = rr.join(fr, rr["rr"] == fr["fr"])
 
     def r2(xc: str):
         d19 = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
@@ -4514,7 +4488,6 @@ def ml_conformal_ols_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         cal.groupBy("r_q6")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .withColumn("bkt", F.floor(F.col("r_q6") / F.lit(1000000)).cast("long"))
-        .persist()
     )
     w_in = (
         Window.partitionBy("bkt")
@@ -5767,7 +5740,6 @@ def ml_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
         lab.groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .withColumn("bkt", F.floor(F.col("v") / F.lit(1000000)).cast("long"))
-        .persist()
     )
     w_in = (
         Window.partitionBy("bkt")
@@ -8703,7 +8675,7 @@ def ml_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = coded.groupBy("i", "j").agg(
         F.count(F.lit(1)).cast("bigint").alias("o")
-    ).persist()
+    )
     ri = cells.groupBy("i").agg(F.sum("o").cast("bigint").alias("r"))
     cj = cells.groupBy("j").agg(F.sum("o").cast("bigint").alias("c"))
     tot = cells.agg(F.sum("o").cast("bigint").alias("n"))
@@ -8809,7 +8781,7 @@ def ml_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table_parallel(spark, sf_dir, "documents")
     cells = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("nij")
-    ).persist()
+    )
     sij = cells.agg(
         F.sum(F.expr("CAST((nij * (nij - 1)) DIV 2 AS BIGINT)"))
         .cast("bigint")
@@ -8931,7 +8903,7 @@ def ml_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table_parallel(spark, sf_dir, "documents")
     cells = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("nij")
-    ).persist()
+    )
     ai = cells.groupBy("lang").agg(F.sum("nij").cast("bigint").alias("ai"))
     bj = cells.groupBy("source").agg(
         F.sum("nij").cast("bigint").alias("bj")

@@ -65,6 +65,11 @@ another plans module (tests/test_recipes.py enforces both).
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -114,6 +119,26 @@ def register(
         return fn
 
     return deco
+
+
+def _remove_scratch(root: str, owner: int) -> None:
+    if os.getpid() == owner:  # a forked child inherits the exit handler
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="graft_scratch_")
+    atexit.register(_remove_scratch, root, os.getpid())
+    return root
+
+
+def scratch_dir(prefix: str, parent: str | None = None) -> str:
+    """A new directory for a build's sinks, checkpoints or databases.
+    Every one lives under one per-process root that is removed at
+    interpreter exit, not when the query ends: a streaming sink must
+    outlive the build until its own sink runs."""
+    return tempfile.mkdtemp(prefix=prefix, dir=parent or _scratch_root())
 
 
 def get(name: str) -> QuerySpec:

@@ -29,7 +29,7 @@ from finance_etl_spark.plans.recipes import (
     daily_q6,
     seg_daily,
 )
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -420,25 +420,22 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "agg_grouping_sets",
-    tags=("agg", "sql"),
-    oracle="""
+_GROUPING_SETS_SQL = """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-    """,
+"""
+
+
+@register(
+    "agg_grouping_sets",
+    tags=("agg", "sql"),
+    oracle=_GROUPING_SETS_SQL,
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL API."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
-    )
+    return spark.sql(_GROUPING_SETS_SQL)
 
 
 @register(
@@ -808,26 +805,23 @@ def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Subqueries (correlated EXISTS handled by join_left_semi; here: IN + scalar).
 
-@register(
-    "subquery_in",
-    tags=("subquery", "sql"),
-    oracle="""
+_SUBQUERY_IN_SQL = """
         SELECT o_orderkey, o_totalprice FROM orders
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
           AND o_totalprice > 350000
-    """,
+"""
+
+
+@register(
+    "subquery_in",
+    tags=("subquery", "sql"),
+    oracle=_SUBQUERY_IN_SQL,
 )
 def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN subquery (planned as a left-semi join by Catalyst)."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice FROM orders
-        WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-          AND o_totalprice > 350000
-        """
-    )
+    return spark.sql(_SUBQUERY_IN_SQL)
 
 
 @register(
@@ -929,10 +923,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_shapes.py). This is the co-located-join strategy
     for repeated fact/dim joins at 100 TB: pay the partitioning once at
     write time, never again at read time."""
-    import tempfile
-
     spark.sql("CREATE DATABASE IF NOT EXISTS engine_buckets")
-    loc = tempfile.mkdtemp(prefix="buckets_")
+    loc = scratch_dir("buckets_")
     sides = {
         "cust_b": (
             load_table(spark, sf_dir, "customer").select("c_custkey", "c_name"),
@@ -1250,10 +1242,7 @@ def scalar_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "subquery_exists_correlated",
-    tags=("subquery", "sql"),
-    oracle="""
+_EXISTS_CORRELATED_SQL = """
         SELECT c_custkey, c_mktsegment
         FROM customer c
         WHERE EXISTS (SELECT 1 FROM orders o
@@ -1263,7 +1252,13 @@ def scalar_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_orderstatus = 'F'
                             AND o.o_totalprice > 150000)
-    """,
+"""
+
+
+@register(
+    "subquery_exists_correlated",
+    tags=("subquery", "sql"),
+    oracle=_EXISTS_CORRELATED_SQL,
 )
 def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS + NOT EXISTS (customers with an urgent order
@@ -1273,31 +1268,22 @@ def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser/analyzer path end-to-end."""
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_mktsegment
-        FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_orderpriority = '1-URGENT')
-          AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderstatus = 'F'
-                            AND o.o_totalprice > 150000)
-        """
-    )
+    return spark.sql(_EXISTS_CORRELATED_SQL)
 
 
-@register(
-    "sql_lateral_topk",
-    tags=("subquery", "sql", "topk"),
-    oracle="""
+_LATERAL_TOPK_SQL = """
         SELECT n.n_name, t.c_custkey, t.c_acctbal
         FROM nation n,
         LATERAL (SELECT c_custkey, c_acctbal FROM customer c
                  WHERE c.c_nationkey = n.n_nationkey
                  ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 2) t
-    """,
+"""
+
+
+@register(
+    "sql_lateral_topk",
+    tags=("subquery", "sql", "topk"),
+    oracle=_LATERAL_TOPK_SQL,
 )
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI LATERAL correlated subquery: per-nation top-2 customers by
@@ -1308,15 +1294,7 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive execution. Unique c_custkey tiebreak keeps top-2 exact."""
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
-        """
-        SELECT n.n_name, t.c_custkey, t.c_acctbal
-        FROM nation n,
-        LATERAL (SELECT c_custkey, c_acctbal FROM customer c
-                 WHERE c.c_nationkey = n.n_nationkey
-                 ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 2) t
-        """
-    )
+    return spark.sql(_LATERAL_TOPK_SQL)
 
 
 @register(
@@ -1643,12 +1621,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "subquery_not_in_null_aware",
-    tags=("subquery", "anti-join", "three-valued-logic"),
-    oracle=f"""
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-               {o_dsum('o_totalprice')} AS total_price
+_NOT_IN_FROM_SQL = """
         FROM (
             SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
                         ELSE o_custkey END AS k,
@@ -1657,6 +1630,16 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         WHERE k NOT IN (SELECT c_custkey FROM customer
                         WHERE c_mktsegment = 'BUILDING')
+"""
+
+
+@register(
+    "subquery_not_in_null_aware",
+    tags=("subquery", "anti-join", "three-valued-logic"),
+    oracle=f"""
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+               {o_dsum('o_totalprice')} AS total_price
+        {_NOT_IN_FROM_SQL}
     """,
 )
 def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,18 +1653,11 @@ def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
-        """
+        f"""
         SELECT COUNT(*) AS n_rows,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS DOUBLE)
                    AS total_price
-        FROM (
-            SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
-                        ELSE o_custkey END AS k,
-                   o_totalprice
-            FROM orders
-        )
-        WHERE k NOT IN (SELECT c_custkey FROM customer
-                        WHERE c_mktsegment = 'BUILDING')
+        {_NOT_IN_FROM_SQL}
         """
     )
 
@@ -2105,13 +2081,7 @@ def agg_boolean_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "subquery_scalar_correlated",
-    tags=("subquery", "sql", "decorrelation"),
-    oracle=f"""
-        SELECT o_orderstatus,
-               CAST(COUNT(*) AS BIGINT) AS n_above_own_avg,
-               {o_dsum('o_totalprice')} AS total_above
+_ABOVE_OWN_AVG_FROM_SQL = """
         FROM orders o
         WHERE o.o_totalprice > (
             SELECT CAST(SUM(CAST(i.o_totalprice AS DECIMAL(30,10)))
@@ -2119,6 +2089,17 @@ def agg_boolean_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM orders i WHERE i.o_custkey = o.o_custkey
         )
         GROUP BY o_orderstatus
+"""
+
+
+@register(
+    "subquery_scalar_correlated",
+    tags=("subquery", "sql", "decorrelation"),
+    oracle=f"""
+        SELECT o_orderstatus,
+               CAST(COUNT(*) AS BIGINT) AS n_above_own_avg,
+               {o_dsum('o_totalprice')} AS total_above
+        {_ABOVE_OWN_AVG_FROM_SQL}
     """,
 )
 def subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2132,18 +2113,12 @@ def subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderstatus,
                COUNT(*) AS n_above_own_avg,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS DOUBLE)
                    AS total_above
-        FROM orders o
-        WHERE o.o_totalprice > (
-            SELECT CAST(SUM(CAST(i.o_totalprice AS DECIMAL(30,10)))
-                        AS DOUBLE) / COUNT(i.o_totalprice)
-            FROM orders i WHERE i.o_custkey = o.o_custkey
-        )
-        GROUP BY o_orderstatus
+        {_ABOVE_OWN_AVG_FROM_SQL}
         """
     )
 
@@ -2823,7 +2798,7 @@ def agg_kmv_intersection_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_sketches.py against exact counts."""
     k = _KMV_K
     o = load_table(spark, sf_dir, "orders")
-    sk = kmv_sketches(o, "o_orderpriority", "o_custkey", k).persist()
+    sk = kmv_sketches(o, "o_orderpriority", "o_custkey", k)
     per_group = sk.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n"), F.max("h").alias("kth")
     )
@@ -3344,7 +3319,7 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(12,2)").alias("x")
     ).agg(F.count(F.lit(1)).alias("w")).withColumn(
         "bkt", F.floor(F.col("x") / F.lit(10000)).cast("long")
-    ).persist()
+    )
     w_in = (
         Window.partitionBy("bkt")
         .orderBy("x")
@@ -3577,7 +3552,7 @@ def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     kc = o.groupBy(F.col("o_custkey").alias("k")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
-    ).persist()  # |keys| rows: consumed by the sketch build AND top-5
+    )
     rs = spark.range(0, 4).select(F.col("id").cast("int").alias("r"))
     bucket = (
         F.conv(
@@ -3678,7 +3653,6 @@ def agg_kmv_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("h"),
         )
         .distinct()
-        .persist()  # consumed by both the rank and the exact count
     )
     w = Window.partitionBy("g").orderBy("h")
     kept = (
@@ -3959,7 +3933,7 @@ def agg_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pinned; the false-positive census is exact integer output."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    buyers = o.select(F.col("o_custkey").alias("k")).distinct().persist()
+    buyers = o.select(F.col("o_custkey").alias("k")).distinct()
     rs = spark.range(0, 3).select(F.col("id").cast("int").alias("r"))
     pos = (
         F.conv(
@@ -4287,7 +4261,7 @@ def agg_ams_f2_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     kc = li.groupBy(F.col("l_partkey").alias("k")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
-    ).persist()  # |keys| rows: sketch build AND exact-F2 baseline
+    )
     rs = spark.range(0, 16).select(F.col("id").cast("int").alias("j"))
     sign = (
         F.conv(

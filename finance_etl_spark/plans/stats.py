@@ -566,7 +566,7 @@ def stat_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.sum(F.when(F.col("g") == 0, F.col("x"))).cast("double")
             / (F.count(F.lit(1)) - F.sum("g")).cast("double")
         ).alias("obs_diff"),
-    ).persist()  # 1 row; consumed by the perm scan AND the final join
+    )
     perms = spark.range(_N_PERM).select(F.col("id").alias("p"))
     u = F.conv(
         F.substring(
@@ -1559,7 +1559,7 @@ def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice").cast("decimal(12,2)") * F.lit(100))
         .cast("bigint")
         .alias("xc"),
-    ).persist()  # scanned for the median AND for the deviations
+    )
     per_val = lab.groupBy("g", "xc").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
@@ -1726,7 +1726,6 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("q", "d")
         .agg(F.count(F.lit(1)).alias("o"))
-        .persist()
     )
     dec = "decimal(38,0)"
     c1, c2 = cells.alias("c1"), cells.alias("c2")
@@ -3497,7 +3496,6 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_cust.select((F.col("post") - F.col("pre")).alias("diff"))
         .filter(F.col("diff") != 0)
         .withColumn("ad", F.abs(F.col("diff")))
-        .persist()  # consumed by the rank join AND the tie sum
     )
     rv = midranks2(d, "ad", 1000000)
     s = d.join(rv, d.ad == rv.v).agg(
@@ -4466,17 +4464,20 @@ def stat_bowker_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stat_ansari_bradley — two-sample scale (dispersion) test
 
 
-@register(
-    "stat_ansari_bradley",
-    tags=("stats", "window", "agg"),
-    oracle="""
-        WITH ts AS (
+_AB_SAMPLE_SQL = """
             SELECT CAST(o_totalprice AS DECIMAL(12,2)) AS x,
                    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
                        AS g
             FROM orders
             WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-        ),
+"""
+
+
+@register(
+    "stat_ansari_bradley",
+    tags=("stats", "window", "agg"),
+    oracle=f"""
+        WITH ts AS ({_AB_SAMPLE_SQL}),
         per_val AS (
             SELECT x, CAST(SUM(g) AS BIGINT) AS a,
                    CAST(SUM(1 - g) AS BIGINT) AS b
@@ -4607,7 +4608,7 @@ def _pooled_cumulative_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_val = per_val.withColumn(
         "bkt", F.floor(F.col("x") / F.lit(10000)).cast("long")
-    ).persist()
+    )
     w_in = (
         Window.partitionBy("bkt")
         .orderBy("x")
@@ -4741,14 +4742,6 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # stat_anderson_darling_2s — integral ECDF test, tail-weighted
-
-_AB_SAMPLE_SQL = """
-            SELECT CAST(o_totalprice AS DECIMAL(12,2)) AS x,
-                   CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-                       AS g
-            FROM orders
-            WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-"""
 
 
 @register(
@@ -5632,7 +5625,7 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cnt") == F.col("k"))
         .select("mth")
     )
-    blocks = cents.join(F.broadcast(fullm), "mth").persist()
+    blocks = cents.join(F.broadcast(fullm), "mth")
     wb = Window.partitionBy("mth")
     u = blocks.select(
         "segment",
@@ -6517,7 +6510,7 @@ def stat_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5 ladder against U(0,1)
 
 
-_UNIF_EDF_SQL = """
+_UNIF_POS_SQL = """
         uni AS (
             SELECT o_orderkey AS key,
                    CAST('0x' || SUBSTRING(
@@ -6529,7 +6522,51 @@ _UNIF_EDF_SQL = """
                    CAST(ROW_NUMBER() OVER (ORDER BY k, key) AS BIGINT) AS i,
                    CAST(COUNT(*) OVER () AS BIGINT) AS n
             FROM uni
-        ),
+        )
+"""
+
+
+def _md5_uniform_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(k, i, n): md5-uniformized order keys with their global EDF rank:
+    u_i = k_i/2^24 exact rational; the rank avoids a global sort via
+    256 top-byte buckets, a per-bucket ROW_NUMBER and a bounded
+    bucket-offset carry (the stat_ks_two_sample bucket+carry shape);
+    identical i to the oracle's plain ROW_NUMBER because both order by
+    (k, key)."""
+    o = load_table(spark, sf_dir, "orders")
+    uni = o.select(
+        F.col("o_orderkey").alias("key"),
+        F.conv(
+            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 6), 16, 10
+        )
+        .cast("bigint")
+        .alias("k"),
+    )
+    bucketed = uni.select("key", "k", F.shiftright("k", 16).alias("bkt"))
+    sizes = bucketed.groupBy("bkt").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    woff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    offs = sizes.select(
+        "bkt",
+        F.coalesce(F.sum("cnt").over(woff), F.lit(0))
+        .cast("bigint")
+        .alias("off"),
+    )
+    tot = sizes.agg(F.sum("cnt").cast("bigint").alias("n"))
+    wrn = Window.partitionBy("bkt").orderBy("k", "key")
+    return (
+        bucketed.join(F.broadcast(offs), "bkt")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "k",
+            "n",
+            (F.col("off") + F.row_number().over(wrn)).cast("bigint").alias("i"),
+        )
+    )
+
+
+_UNIF_EDF_SQL = f"""{_UNIF_POS_SQL},
         edf AS (
             SELECT MAX(n) AS n,
                    CAST(MAX(i * 16777216 - n * k) AS BIGINT) AS dp_s,
@@ -6544,41 +6581,10 @@ def _unif_edf(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-uniformized order keys vs U(0,1). u_i = k_i / 2^24 with k the
     first 24 md5 bits — an exact rational, so D+ = max(i/n - u_(i))
     and D- = max(u_(i) - (i-1)/n) scale to INTEGER maxima
-    dp_s = max(i*2^24 - n*k_i), dm_s = max(n*k_i - (i-1)*2^24).
-    The Spark rank avoids a global sort: 256 buckets on the top 8
-    bits, per-bucket ROW_NUMBER, plus a bucket-offset carry (the
-    stat_ks_two_sample bucket+carry shape); the oracle uses a plain
-    global ROW_NUMBER — same i because both order by (k, key).
+    dp_s = max(i*2^24 - n*k_i), dm_s = max(n*k_i - (i-1)*2^24)
+    over _md5_uniform_pos's ranks.
     i*2^24 <= 1.7e16 at sf1000 (ceiling ~sf4e5)."""
-    o = load_table(spark, sf_dir, "orders")
-    uni = o.select(
-        F.col("o_orderkey").alias("key"),
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 6), 16, 10
-        ).cast("bigint").alias("k"),
-    )
-    bucketed = uni.select("key", "k", F.shiftright("k", 16).alias("bkt"))
-    sizes = bucketed.groupBy("bkt").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    woff = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # 256-row relation: bounded
-    offs = sizes.select(
-        "bkt",
-        F.coalesce(F.sum("cnt").over(woff), F.lit(0)).cast("bigint").alias("off"),
-    )
-    tot = sizes.agg(F.sum("cnt").cast("bigint").alias("n"))
-    wrn = Window.partitionBy("bkt").orderBy("k", "key")
-    pos = (
-        bucketed.join(F.broadcast(offs), "bkt")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "k",
-            "n",
-            (F.col("off") + F.row_number().over(wrn)).cast("bigint").alias("i"),
-        )
-    )
+    pos = _md5_uniform_pos(spark, sf_dir)
     return pos.agg(
         F.max("n").alias("n"),
         F.max(F.col("i") * F.lit(16777216) - F.col("n") * F.col("k"))
@@ -7125,7 +7131,6 @@ def stat_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("y"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()
     )
     row_max = cells.groupBy("x").agg(F.max("n").alias("m"))
     col_tot = cells.groupBy("y").agg(F.sum("n").cast("bigint").alias("s"))
@@ -7230,7 +7235,6 @@ def stat_uncertainty_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("y"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()
     )
     tot = cells.agg(F.sum("n").cast("bigint").alias("nt"))
 
@@ -7544,7 +7548,6 @@ def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("y"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
-        .persist()
     )
     rows_t = cells.groupBy("x").agg(F.sum("o").cast("bigint").alias("r"))
     cols_t = cells.groupBy("y").agg(F.sum("o").cast("bigint").alias("c"))
@@ -7629,9 +7632,7 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_quantity").cast("decimal(12,2)").alias("q"),
         )
     )
-    cells = (
-        li.groupBy("g", "q").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ).persist()
+    cells = li.groupBy("g", "q").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     a = cells.filter(F.col("g") == "R").select(
         F.col("q").alias("qa"), F.col("n").alias("na")
     )
@@ -7750,7 +7751,6 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("mr2").cast("bigint").alias("ru"),
             F.count(F.lit(1)).cast("bigint").alias("ni"),
         )
-        .persist()
     )
     ties = (
         vals.groupBy("q")
@@ -8017,7 +8017,7 @@ def stat_hypergeom_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0))
         .cast("decimal(38,6)")
         .alias("lf"),
-    ).persist()  # one O(N) prefix sum, computed once for the 9 lookups
+    )
     base = (
         cells.join(F.broadcast(ai), "lang")
         .join(F.broadcast(bj), "source")
@@ -8066,60 +8066,6 @@ def stat_hypergeom_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # stat_cvm_uniform / stat_ad_uniform — one-sample EDF integrals of the
 # md5 ladder vs U(0,1), completing the KS/Kuiper family
-
-_UNIF_POS_SQL = """
-        uni AS (
-            SELECT o_orderkey AS key,
-                   CAST('0x' || SUBSTRING(
-                       md5(CAST(o_orderkey AS VARCHAR)), 1, 6) AS BIGINT) AS k
-            FROM orders
-        ),
-        pos AS (
-            SELECT k,
-                   CAST(ROW_NUMBER() OVER (ORDER BY k, key) AS BIGINT) AS i,
-                   CAST(COUNT(*) OVER () AS BIGINT) AS n
-            FROM uni
-        )
-"""
-
-
-def _md5_uniform_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(k, i, n): md5-uniformized order keys with their global EDF rank
-    — the _unif_edf machinery re-exposed at row granularity:
-    u_i = k_i/2^24 exact rational; the rank avoids a global sort via
-    256 top-byte buckets + a bounded bucket-offset carry; identical i
-    to the oracle's plain ROW_NUMBER because both order by (k, key)."""
-    o = load_table(spark, sf_dir, "orders")
-    uni = o.select(
-        F.col("o_orderkey").alias("key"),
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 6), 16, 10
-        )
-        .cast("bigint")
-        .alias("k"),
-    )
-    bucketed = uni.select("key", "k", F.shiftright("k", 16).alias("bkt"))
-    sizes = bucketed.groupBy("bkt").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    woff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sizes.select(
-        "bkt",
-        F.coalesce(F.sum("cnt").over(woff), F.lit(0))
-        .cast("bigint")
-        .alias("off"),
-    )
-    tot = sizes.agg(F.sum("cnt").cast("bigint").alias("n"))
-    wrn = Window.partitionBy("bkt").orderBy("k", "key")
-    return (
-        bucketed.join(F.broadcast(offs), "bkt")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "k",
-            "n",
-            (F.col("off") + F.row_number().over(wrn)).cast("bigint").alias("i"),
-        )
-    )
 
 
 @register(

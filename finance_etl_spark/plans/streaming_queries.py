@@ -27,7 +27,7 @@ from finance_etl_spark.plans.recipes import (
     PPL_THRESHOLD,
     cusum_changepoint,
 )
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, scratch_dir
 
 
 @register(
@@ -98,10 +98,9 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stream_session_window",
-    tags=("streaming", "window", "session"),
-    oracle="""
+# 30-minute inactivity sessions per user, the batch reference both
+# session-window queries check against
+_SESSION_30M_SQL = """
         WITH flagged AS (
             SELECT user_id, event_id, ts,
                    CASE WHEN lag(ts) OVER w IS NULL
@@ -120,7 +119,13 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                MAX(ts) + INTERVAL 30 MINUTE AS session_end,
                COUNT(*) AS n_events
         FROM sessions GROUP BY user_id, session_id
-    """,
+"""
+
+
+@register(
+    "stream_session_window",
+    tags=("streaming", "window", "session"),
+    oracle=_SESSION_30M_SQL,
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window (30-minute gap) aggregation — the same
@@ -210,14 +215,12 @@ def stream_live_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     reference's incremental load under a stream). The stream runs
     TWICE against the same sink — the replay must insert nothing —
     and the sink must hold each event exactly once."""
-    import tempfile
-
     from finance_etl_spark.streaming.runner import (
         events_stream,
         idempotent_append_batch,
     )
 
-    sink = tempfile.mkdtemp(prefix="stream_sink_")
+    sink = scratch_dir("stream_sink_")
     src = events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
 
     def run_once() -> None:
@@ -225,7 +228,7 @@ def stream_live_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
             src.writeStream.foreachBatch(
                 lambda df, _eid: idempotent_append_batch(df, sink, ["event_id"])
             )
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="stream_ckpt_"))
+            .option("checkpointLocation", scratch_dir("stream_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -337,26 +340,7 @@ def stream_live_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_live_session_window",
     tags=("streaming", "live", "window", "session"),
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, event_id, ts,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                          OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sessions AS (
-            SELECT user_id, ts,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-            FROM flagged
-        )
-        SELECT user_id,
-               MIN(ts) AS session_start,
-               MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-               COUNT(*) AS n_events
-        FROM sessions GROUP BY user_id, session_id
-    """,
+    oracle=_SESSION_30M_SQL,
 )
 def stream_live_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with STATE: a real readStream drives
@@ -786,13 +770,11 @@ def stream_live_cdc_to_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs the final snapshot from the tick function; per-
     version contracts (count, v1 content, immutability) are pinned in
     tests/test_tableformat.py."""
-    import tempfile
-
     from finance_etl_spark.io.ticksource import TickDataSource
     from finance_etl_spark.plans.tableformat import read_snapshot, versioned_replace
 
     spark.dataSource.register(TickDataSource)
-    root = tempfile.mkdtemp(prefix="cdc_snap_")
+    root = scratch_dir("cdc_snap_")
     state = {"version": 0}
 
     def apply_batch(df: DataFrame, _eid: int) -> None:
@@ -836,7 +818,7 @@ def stream_live_cdc_to_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         raw.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cdc_ckpt_"))
+        .option("checkpointLocation", scratch_dir("cdc_ckpt_"))
         .start()
     )
     q.processAllAvailable()
@@ -1100,7 +1082,6 @@ def stream_live_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-key incremental load (data_manager.py:172-201) to near-dup
     semantics under a live stream."""
     import os as _os
-    import tempfile as _tf
 
     from finance_etl_spark.io.readers import load_table_parallel
     from finance_etl_spark.operators.dedup import shingle_array
@@ -1134,7 +1115,7 @@ def stream_live_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes_new = sizes_all.select(
         F.col("doc_id").alias("new_id"), F.col("n_sh").alias("na")
     )
-    sink = _tf.mkdtemp(prefix="admit_sink_")
+    sink = scratch_dir("admit_sink_")
 
     # ---- streaming side: batch docs arrive as a file stream ----
     batch_schema = parquet_schema(
@@ -1187,7 +1168,7 @@ def stream_live_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         stream.writeStream.foreachBatch(admit_batch)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="admit_ckpt_"))
+        .option("checkpointLocation", scratch_dir("admit_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1222,11 +1203,10 @@ def stream_live_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuation IS the exactly-once contract."""
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
 
-    src_dir = _tf.mkdtemp(prefix="bft_src_")
-    ckpt = _tf.mkdtemp(prefix="bft_ckpt_")
-    sink = _tf.mkdtemp(prefix="bft_sink_")
+    src_dir = scratch_dir("bft_src_")
+    ckpt = scratch_dir("bft_ckpt_")
+    sink = scratch_dir("bft_sink_")
     events_path = _os.path.join(sf_dir, "events.parquet")
     _sh.copyfile(events_path, _os.path.join(src_dir, "part-000.parquet"))
     schema = parquet_schema(spark, events_path)
@@ -1339,7 +1319,6 @@ def stream_live_perplexity_admission(
     hash-checked. Per-batch cost is a bigram-key probe of the
     model index; the corpus is never rescanned."""
     import os as _os
-    import tempfile as _tf
 
     from finance_etl_spark.io.readers import load_table_parallel
 
@@ -1384,7 +1363,7 @@ def stream_live_perplexity_admission(
         .persist()
     )
     c12.count(), c1.count(), vocab.count()
-    sink = _tf.mkdtemp(prefix="ppl_admit_sink_")
+    sink = scratch_dir("ppl_admit_sink_")
 
     batch_schema = parquet_schema(
         spark, _os.path.join(sf_dir, "documents.parquet")
@@ -1438,7 +1417,7 @@ def stream_live_perplexity_admission(
 
     q = (
         stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="ppl_admit_ckpt_"))
+        .option("checkpointLocation", scratch_dir("ppl_admit_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )

@@ -26,14 +26,13 @@ from __future__ import annotations
 import glob
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, scratch_dir
 
 
 def _norm_stat(v):
@@ -113,7 +112,7 @@ def sink_file_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_extendedprice", "l_shipdate"
     )
-    out = tempfile.mkdtemp(prefix="stats_skip_")
+    out = scratch_dir("stats_skip_")
     (
         li.repartitionByRange(16, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -166,7 +165,7 @@ def versioned_append(
     manifest carrying every previous file forward by reference. No
     existing byte is rewritten — O(increment) I/O, like a Delta
     append commit."""
-    add_dir = tempfile.mkdtemp(prefix=f"snap_add_v{version + 1}_", dir=root)
+    add_dir = scratch_dir(f"snap_add_v{version + 1}_", root)
     df.repartition(n_files).write.mode("overwrite").parquet(add_dir)
     prev = []
     if version > 0:
@@ -203,7 +202,7 @@ def versioned_delete(
     carried = [p for p in prev if p not in touched]
     new_files: list[str] = []
     if touched:
-        rw_dir = tempfile.mkdtemp(prefix=f"snap_rw_v{version + 1}_", dir=root)
+        rw_dir = scratch_dir(f"snap_rw_v{version + 1}_", root)
         kept = spark.read.parquet(*sorted(touched)).filter(~predicate)
         kept.write.mode("overwrite").parquet(rw_dir)
         new_files = _data_files(rw_dir)
@@ -248,7 +247,7 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    root = tempfile.mkdtemp(prefix="snap_root_")
+    root = scratch_dir("snap_root_")
     yr = F.year("o_orderdate")
     v1 = versioned_append(spark, root, 0, o.filter(yr <= 1995))
     v2 = versioned_append(spark, root, v1, o.filter(yr == 1996))
@@ -304,7 +303,7 @@ def sink_manifest_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate"
     )
-    out = tempfile.mkdtemp(prefix="meta_count_")
+    out = scratch_dir("meta_count_")
     (
         li.repartitionByRange(16, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -342,7 +341,7 @@ def versioned_replace(
     files (full-snapshot semantics — the CDC-compaction commit shape
     for dimension-sized tables). Old versions keep referencing their
     own files, so time travel across replaces still works."""
-    rw_dir = tempfile.mkdtemp(prefix=f"snap_repl_v{version + 1}_", dir=root)
+    rw_dir = scratch_dir(f"snap_repl_v{version + 1}_", root)
     df.repartition(n_files).write.mode("overwrite").parquet(rw_dir)
     _write_snapshot(root, version + 1, _data_files(rw_dir))
     return version + 1
@@ -432,7 +431,7 @@ def sink_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    root = tempfile.mkdtemp(prefix="mor_root_")
+    root = scratch_dir("mor_root_")
     v1 = versioned_append(spark, root, 0, o)
     # delete commit: the key set goes executor→parquet directly — a
     # fact-sized CDC purge never materializes on the driver
@@ -486,7 +485,7 @@ def sink_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    root = tempfile.mkdtemp(prefix="pevo_root_")
+    root = scratch_dir("pevo_root_")
     manifest: list[dict] = []
 
     def commit(df: DataFrame, spec: int, part: dict, sub: str) -> None:
@@ -622,7 +621,7 @@ def sink_bloom_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
-    out = tempfile.mkdtemp(prefix="bloom_skip_")
+    out = scratch_dir("bloom_skip_")
     (
         o.repartitionByRange(16, "o_orderdate")
         .sortWithinPartitions("o_orderdate")
@@ -714,7 +713,7 @@ def sink_multi_table_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     yr = F.year("o_orderdate")
     old_keys = o.filter(yr <= 1996).select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="tx_root_")
+    root = scratch_dir("tx_root_")
 
     def stage(df: DataFrame, sub: str) -> list[str]:
         d = os.path.join(root, sub)
@@ -789,8 +788,8 @@ def sink_copy_on_write_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_orderdate").cast("date").alias("o_orderdate")
     )
-    root = tempfile.mkdtemp(prefix="cow_upd_")
-    base_dir = tempfile.mkdtemp(prefix="base_", dir=root)
+    root = scratch_dir("cow_upd_")
+    base_dir = scratch_dir("base_", root)
     (
         o.repartitionByRange(8, "o_orderdate")
         .sortWithinPartitions("o_orderdate")
@@ -806,7 +805,7 @@ def sink_copy_on_write_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried = [p for p in prev if p not in touched]
     new_files: list[str] = []
     if touched:
-        rw_dir = tempfile.mkdtemp(prefix="rw_", dir=root)
+        rw_dir = scratch_dir("rw_", root)
         upd = spark.read.parquet(*sorted(touched)).withColumn(
             "o_totalprice",
             F.when(
@@ -853,8 +852,6 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
     round-trip repr. The reader-side twin is source_python_datasource
     (io/ticksource.py) — together they cover both halves of the
     Python DataSource API."""
-    import tempfile
-
     from finance_etl_spark.io.manifestsink import (
         ManifestJsonlSink,
         read_manifest,
@@ -864,7 +861,7 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    target = tempfile.mkdtemp(prefix="pyds_sink_")
+    target = scratch_dir("pyds_sink_")
     (
         o.repartition(8)
         .write.format("manifest_jsonl")
@@ -917,7 +914,7 @@ def sink_parquet_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     outs = []
     for codec in ("gzip", "snappy", "zstd"):
-        d = tempfile.mkdtemp(prefix=f"codec_{codec}_")
+        d = scratch_dir(f"codec_{codec}_")
         (
             li.repartition(4)
             .write.mode("overwrite")

@@ -2185,7 +2185,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.filter(F.split(F.col("text"), SPACE), lambda t: t != "").alias(
             "lst"
         ),
-    ).persist()
+    )
     tris = (
         docs.filter(F.size("lst") >= 3)
         .select("doc_id", "lst", F.posexplode("lst").alias("i", "w1"))
@@ -2200,7 +2200,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tri"),
         )
         .distinct()
-    ).persist()
+    )
     first_seen = tris.groupBy("tri").agg(F.min("doc_id").alias("first_doc"))
     return (
         tris.join(first_seen, "tri")
@@ -2346,7 +2346,6 @@ def text_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .build(spark, sf_dir)
         .filter(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b")
-        .persist()
     )
     both = truth.join(lsh, ["id_a", "id_b"]).count()
     n_truth, n_lsh = truth.count(), lsh.count()
@@ -2803,7 +2802,6 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") == F.col("doc_id_b")) & (F.col("pos_b") == F.col("pos") + 1),
     ).select("w1", "w2")
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("bigint").alias("c12"))
-    c12 = c12.persist()
     c1 = c12.groupBy("w1").agg(
         F.sum("c12").cast("bigint").alias("c1"),
         F.count(F.lit(1)).cast("bigint").alias("n_post"),
@@ -3988,7 +3986,6 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", "source", ts.alias("ts"))
         .filter(F.size("ts") >= 5)
         .select("doc_id", "source", F.explode(grams_arr).alias("g"))
-        .persist()
     )
     dfs = grams.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")

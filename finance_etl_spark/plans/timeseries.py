@@ -2562,7 +2562,7 @@ def ts_dtw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             lambda s: s.getField("xq"),
         ).alias("xs")
-    ).persist()  # |types| rows; both sides of the pair cross join
+    )
     a = ser.select(F.col("event_type").alias("type_a"), F.col("xs").alias("va"))
     b = ser.select(F.col("event_type").alias("type_b"), F.col("xs").alias("vb"))
     pairs = (
@@ -2700,10 +2700,7 @@ def ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation; the pyramid runs on O(types x 32) rows. The per-level
     energies read as a scale spectrum: where the series' variance
     lives (daily noise vs weekly cycle vs month trend)."""
-    daily = (
-        event_daily(spark, sf_dir)
-        .persist()  # O(types x days); feeds leaves AND the pad rows
-    )
+    daily = event_daily(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("d")
     leaves = daily.select(
         "event_type",
@@ -3137,7 +3134,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-tied Var=0 degenerate (Spark NULL vs DuckDB IEEE divergence
     class). Same O(days²)-per-series pair join and one-scan daily
     collapse as ts_theil_sen."""
-    daily = daily_scaled(spark, sf_dir).persist()
+    daily = daily_scaled(spark, sf_dir)
     n = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
@@ -3306,7 +3303,7 @@ def ts_granger_causality_1lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
         "event_type", "day", "v", F.lag("v").over(w).alias("v1")
-    ).filter(F.col("v1").isNotNull()).persist()
+    ).filter(F.col("v1").isNotNull())
     y = lagged.select(
         F.col("event_type").alias("y_type"),
         "day",
@@ -4722,8 +4719,8 @@ def ts_lttb_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     six bucket picks as chained CTEs (the farthest-point recipe). The
     variant pins its own bucket convention (next-bucket = the points
     of the following bucket; last interior bucket looks at the final
-    point). Spark runs the same six rounds over a persisted 30-row
-    relation with broadcast single-row anchors."""
+    point). Spark runs the same six rounds over a 30-row relation with
+    broadcast single-row anchors."""
     e = load_table(spark, sf_dir, "events")
     daily = (
         e.filter(F.col("event_type") == "click")
@@ -4740,7 +4737,6 @@ def ts_lttb_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(Window.orderBy("d")).cast("bigint").alias("rn"),
             "yq",
         )
-        .persist()
     )
     n = daily.count()  # ONE scalar collect over the calendar-bounded relation
     bounds = [1 + (i * (n - 2)) // 6 for i in range(7)]
@@ -6146,7 +6142,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the lag grid is a broadcast 8-row relation crossed with the
     calendar-bounded return series — corpus work is only the shared
     daily agg."""
-    daily = seg_daily(spark, sf_dir).persist()
+    daily = seg_daily(spark, sf_dir)
     ws = Window.partitionBy("segment").orderBy("d")
     rets = (
         daily.filter(F.col("segment").isin("BUILDING", "MACHINERY"))
@@ -6860,7 +6856,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     single presentation expression (IEEE sqrt + one division)."""
     daily = daily_q6(spark, sf_dir).withColumn(
         "wd", F.weekday("d").cast("int")
-    ).persist()
+    )
     a = daily.select(
         "event_type", "wd", F.col("d").alias("d1"), F.col("v").alias("v1")
     )
@@ -7105,7 +7101,7 @@ def ts_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         F.row_number().over(w_t).alias("i"),
         F.count(F.lit(1)).over(w_all).alias("n"),
-    ).persist()
+    )
     a = idxed.filter(F.col("i") <= F.expr("n DIV 2")).select(
         "event_type",
         (F.col("i") + (F.col("n") - F.expr("n DIV 2"))).alias("j"),
@@ -7517,7 +7513,6 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w_t).alias("i"),
         )
         .filter(F.col("v2").isNotNull())
-        .persist()  # consumed by the sigma agg AND the pair join
     )
     sig = tmpl.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("nt"),

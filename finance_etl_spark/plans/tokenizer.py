@@ -35,6 +35,13 @@ from finance_etl_spark.plans.registry import register
 
 TOKEN_PATTERN = "[a-z0-9']+"
 _TOKEN_SQL = "[a-z0-9'']+"  # same pattern, SQL-escaped quote
+# DuckDB word frequencies of the corpus, the oracles' wf relation
+_WORD_FREQ_SQL = f"""
+    SELECT u.word, CAST(COUNT(*) AS BIGINT) AS freq
+    FROM documents,
+         unnest(regexp_extract_all(lower(text), '{_TOKEN_SQL}')) u(word)
+    GROUP BY u.word
+"""
 
 
 def _bpe_rounds_sql(n_merges: int) -> str:
@@ -47,12 +54,7 @@ def _bpe_rounds_sql(n_merges: int) -> str:
     multiply-referenced CTEs otherwise (oracle-determinism rule #9)."""
     parts = [
         f"""
-        wf AS MATERIALIZED (
-            SELECT u.word, CAST(COUNT(*) AS BIGINT) AS freq
-            FROM documents,
-                 unnest(regexp_extract_all(lower(text), '{_TOKEN_SQL}')) u(word)
-            GROUP BY u.word
-        ),
+        wf AS MATERIALIZED ({_WORD_FREQ_SQL}),
         state_0 AS MATERIALIZED (
             SELECT word, freq,
                    list_filter(string_split(word, ''), c -> c <> '') AS symbols
@@ -255,7 +257,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats); tests/test_tokenizer.py pins the encoding against the
     pure-Python reference."""
     d = load_table(spark, sf_dir, "documents")
-    wf = word_frequencies(d).persist()
+    wf = word_frequencies(d)
     rules = train_bpe(wf, n_merges=8)
     enc = apply_bpe(wf, rules)
     out = (
@@ -300,12 +302,7 @@ def wordpiece_encode_word(word: str, vocab: frozenset) -> list:
 # left-joins the precomputed lookup and advances by the matched length
 # (no aggregate/window in the recursive term, which DuckDB forbids).
 _WP_ORACLE = f"""
-WITH RECURSIVE wf AS MATERIALIZED (
-    SELECT u.word, CAST(COUNT(*) AS BIGINT) AS freq
-    FROM documents,
-         unnest(regexp_extract_all(lower(text), '{_TOKEN_SQL}')) u(word)
-    GROUP BY u.word
-),
+WITH RECURSIVE wf AS MATERIALIZED ({_WORD_FREQ_SQL}),
 top_words AS MATERIALIZED (
     SELECT word FROM wf ORDER BY freq DESC, word LIMIT 20
 ),

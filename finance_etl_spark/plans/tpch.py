@@ -923,14 +923,15 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q21_SQL)
 
 
-_Q22_SPARK_SQL = """
+# {total} is each engine's exact-sum recipe: o_dsum for DuckDB, its
+# Spark SQL spelling for Spark
+_Q22_SQL = """
     SELECT CAST(c_custkey % 7 AS BIGINT) AS cohort,
            CAST(COUNT(*) AS BIGINT) AS numcust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(30,10))) AS DOUBLE) AS totacctbal
+           {total} AS totacctbal
     FROM customer
     WHERE c_acctbal > (
-            SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(30,10))) AS DOUBLE)
-                   / COUNT(*)
+            SELECT {total} / COUNT(*)
             FROM customer WHERE c_acctbal > 0.0)
       AND NOT EXISTS (SELECT 1 FROM orders
                       WHERE o_custkey = c_custkey
@@ -942,19 +943,7 @@ _Q22_SPARK_SQL = """
 @register(
     "q22_dormant_customers",
     tags=("tpch", "subquery", "anti-join", "scalar"),
-    oracle=f"""
-        SELECT CAST(c_custkey % 7 AS BIGINT) AS cohort,
-               CAST(COUNT(*) AS BIGINT) AS numcust,
-               {o_dsum('c_acctbal')} AS totacctbal
-        FROM customer
-        WHERE c_acctbal > (
-                SELECT {o_dsum('c_acctbal')} / COUNT(*)
-                FROM customer WHERE c_acctbal > 0.0)
-          AND NOT EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey
-                            AND o_orderdate >= TIMESTAMP '2000-07-01')
-        GROUP BY 1
-    """,
+    oracle=_Q22_SQL.format(total=o_dsum("c_acctbal")),
 )
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): above-average-balance
@@ -966,4 +955,6 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice but shuffled never."""
     for t in ("customer", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_Q22_SPARK_SQL)
+    return spark.sql(
+        _Q22_SQL.format(total="CAST(SUM(CAST(c_acctbal AS DECIMAL(30,10))) AS DOUBLE)")
+    )

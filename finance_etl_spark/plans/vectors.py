@@ -46,25 +46,30 @@ def _cos(a: str, b: str) -> str:
     return f"{_DOT.format(a=a, b=b)} / ({_NORM.format(a=a)} * {_NORM.format(a=b)})"
 
 
+def _topk_sql(score: str, name: str) -> str:
+    """DuckDB exact top-5 neighbours by ``score`` for query vectors 0-4."""
+    return f"""
+        WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
+        scored AS (
+            SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+                   {score} AS {name}
+            FROM q JOIN embeddings e ON e.vec_id <> q.vec_id
+        ),
+        ranked AS (
+            SELECT query_id, neighbor_id, {name},
+                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                        ORDER BY {name} DESC, neighbor_id) AS INT) AS rank
+            FROM scored
+        )
+        SELECT query_id, neighbor_id, rank, {name} FROM ranked WHERE rank <= 5
+    """
+
+
 @register(
     "vec_cosine_topk",
     headline=True,
     tags=("vector", "similarity"),
-    oracle=f"""
-        WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-        scored AS (
-            SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                   {_cos('q.embedding', 'e.embedding')} AS cos_sim
-            FROM q JOIN embeddings e ON e.vec_id <> q.vec_id
-        ),
-        ranked AS (
-            SELECT query_id, neighbor_id, cos_sim,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, rank, cos_sim FROM ranked WHERE rank <= 5
-    """,
+    oracle=_topk_sql(_cos("q.embedding", "e.embedding"), "cos_sim"),
 )
 def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for a small query set: queries
@@ -380,6 +385,14 @@ def ivf_index(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     return cents1, lists
 
 
+# DuckDB floor-quantized mean of ``val`` per group (1e-9 grid)
+_QMEAN_SQL = (
+    "CAST(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * CAST(1e9 AS DOUBLE))"
+    " AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)"
+    " / (CAST(COUNT(*) AS DOUBLE) * CAST(1e9 AS DOUBLE))"
+)
+
+
 _IVF_INDEX_SQL = f"""
         seed16 AS (
             SELECT vec_id, embedding FROM embeddings
@@ -406,11 +419,7 @@ _IVF_INDEX_SQL = f"""
         ),
         mns AS (
             SELECT cluster_id, dim,
-                   CAST(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE)
-                                            * CAST(1e9 AS DOUBLE))
-                                       AS DECIMAL(38,0))) AS VARCHAR)
-                        AS DOUBLE)
-                   / (CAST(COUNT(*) AS DOUBLE) * CAST(1e9 AS DOUBLE)) AS m
+                   {_QMEAN_SQL} AS m
             FROM elems GROUP BY cluster_id, dim
         ),
         cents1 AS (
@@ -704,11 +713,6 @@ def _kmeans_iter_sql(i: int) -> str:
     """One unrolled Lloyd iteration: argmax-cosine assignment (max
     struct — tie semantics match Spark's F.max(struct) positionally),
     floor-quantized element-wise means, list re-pack."""
-    qm = (
-        "CAST(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * CAST(1e9 AS DOUBLE))"
-        " AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)"
-        " / (CAST(COUNT(*) AS DOUBLE) * CAST(1e9 AS DOUBLE))"
-    )
     return f"""
         a{i} AS (
             SELECT e.vec_id,
@@ -724,7 +728,7 @@ def _kmeans_iter_sql(i: int) -> str:
             FROM a{i} a JOIN embeddings e2 ON e2.vec_id = a.vec_id
         ),
         mn{i} AS (
-            SELECT cluster_id, dim, {qm} AS m
+            SELECT cluster_id, dim, {_QMEAN_SQL} AS m
             FROM el{i} GROUP BY cluster_id, dim
         ),
         kcents{i} AS (
@@ -1558,21 +1562,7 @@ def vec_ood_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vec_mips_topk",
     tags=("vector", "similarity"),
-    oracle=f"""
-        WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-        scored AS (
-            SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                   {_DOT.format(a='q.embedding', b='e.embedding')} AS dot
-            FROM q JOIN embeddings e ON e.vec_id <> q.vec_id
-        ),
-        ranked AS (
-            SELECT query_id, neighbor_id, dot,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY dot DESC, neighbor_id) AS INT) AS rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, rank, dot FROM ranked WHERE rank <= 5
-    """,
+    oracle=_topk_sql(_DOT.format(a="q.embedding", b="e.embedding"), "dot"),
 )
 def vec_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum-inner-product top-5 (MIPS) — the recommender-scoring
@@ -2750,7 +2740,7 @@ def vec_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         (F.col("dim0") + 1).alias("dim"),
         F.col("val").cast("double").alias("val"),
-    ).persist()  # consumed by the centroid build AND the distance join
+    )
     ordered = F.array_sort(F.collect_list(F.struct("vec_id", "val")))
     fold = F.aggregate(
         F.transform(ordered, lambda s: s.getField("val")),
@@ -2883,7 +2873,6 @@ def vec_kmeans_unrolled2(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("dim0") + 1).alias("dim"),
             F.col("val").cast("double").alias("val"),
         )
-        .persist()
     )
     seeds = (
         e.select("vec_id")
@@ -3080,7 +3069,7 @@ def vec_mmr_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical doubles), so the greedy selection 7*rel - 3*max_sim
     is pure BIGINT arithmetic with a (score, vec_id) tiebreak, and the
     oracle unrolls the picks as chained CTEs. Spark runs the same
-    rounds over a persisted pool/sim pair (24 and ~170 rows); the only
+    rounds over a persisted 24-row pool and ~170 similarity rows; the only
     corpus-scale work is the relevance scan against three broadcast
     probes."""
     e = load_table(spark, sf_dir, "embeddings")
@@ -3123,7 +3112,6 @@ def vec_mmr_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             qsum(F.col("va_val") * F.col("vb_val"), 12).alias("simq")
         )
-        .persist()
     )
     wpick = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "vec_id")
     # The state is the picks so far (3 rows per round, one per probe).
@@ -3326,7 +3314,6 @@ def vec_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine("q_emb", "embedding").alias("cos_sim"),
             diff_sq.alias("dist_sq"),
         )
-        .persist()
     )
     wa = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), "cand_id"

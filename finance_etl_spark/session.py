@@ -125,19 +125,25 @@ def get_spark(
 def count_py4j_calls() -> Iterator[list[int]]:
     """Count the py4j round trips the driver makes inside the block, from
     every thread: ``with count_py4j_calls() as n: ...`` leaves the count
-    in ``n[0]``. Wraps ``ClientServerConnection.send_command``, the
-    transport of PySpark's default pinned-thread mode, so every call to
-    the JVM (a method, a field, an object freed) counts once."""
+    in ``n[0]`` and, of those, the proxy frees in ``n[1]``. Wraps
+    ``ClientServerConnection.send_command``, the transport of PySpark's
+    default pinned-thread mode, so every call to the JVM (a method, a
+    field, an object freed) counts once. py4j frees a proxy whenever
+    Python drops it, including proxies made before the block, so
+    ``n[0] - n[1]`` is the part the block's own code decides."""
     from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
-    n = [0]
+    free = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    n = [0, 0]
     lock = threading.Lock()
     send = ClientServerConnection.send_command
 
-    def counted(self, *args, **kwargs):
+    def counted(self, command, *args, **kwargs):
         with lock:
             n[0] += 1
-        return send(self, *args, **kwargs)
+            n[1] += command.startswith(free)
+        return send(self, command, *args, **kwargs)
 
     ClientServerConnection.send_command = counted
     try:

@@ -20,9 +20,9 @@ MAIN = "import sys, probe; probe.GATE_TIMEOUT_S = 0.0; raise SystemExit(probe.ma
 
 @pytest.fixture
 def run(sf_dir):
-    def go(*argv):
+    def go(*argv, runs=1):
         out = subprocess.run(
-            [sys.executable, "-c", MAIN, *argv, "--sf", sf_dir, "--runs", "1"],
+            [sys.executable, "-c", MAIN, *argv, "--sf", sf_dir, "--runs", str(runs)],
             cwd=TOOLS,
             capture_output=True,
             text=True,
@@ -51,6 +51,18 @@ def test_time_reports_build_sink_split_and_jobs(run):
     # clearCache() does not drop
     assert loop["query"] == "graph_kcore_peel"
     assert loop["rdds_left_after_clear"] == 1 and loop["bytes_left_after_clear"] > 0
+
+
+def test_time_reports_a_stable_py4j_count(run):
+    """A build's own round trips, proxy frees left out, are the same on
+    every warm run; the report keeps the least of them."""
+    code, [rec] = run("time", "q1_pricing_summary", runs=3)
+    assert code == 0
+    counts = rec["runs_build_py4j_calls"]
+    assert len(counts) == 3 and min(counts) > 0
+    assert rec["build_py4j_calls"] == min(counts)
+    assert len(set(counts)) == 1, counts
+    assert rec["build_py4j_frees"] >= 0
 
 
 def test_ab_same_rows_exits_zero(run):

@@ -1,6 +1,9 @@
 """Real Structured Streaming runs (file source, memory/parquet sinks)
 asserted against their batch equivalents."""
 
+import os
+import subprocess
+import sys
 import uuid
 
 from pyspark.sql import functions as F
@@ -259,3 +262,29 @@ def test_tick_stream_reader_replay_identity():
     assert sliced == replay
     # a mid-stream recovery slice too
     assert list(r.readBetweenOffsets({"tick": 200}, {"tick": 300})) == sliced[200:300]
+
+
+_BUILD_AND_COLLECT = """
+import sys
+from finance_etl_spark import plans
+from finance_etl_spark.session import get_spark
+spark = get_spark("scratch-dirs", shuffle_partitions=4)
+for name in sys.argv[2:]:
+    assert plans.get(name).build(spark, sys.argv[1]).collect()
+"""
+
+
+def test_builds_leave_no_scratch_dirs(sf_dir, tmp_path):
+    """A streaming sink and a file sink, built and collected in a fresh
+    interpreter, leave nothing in that interpreter's temp dir: every
+    build directory lives under one root removed at exit."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = ["stream_live_foreachbatch_sink", "sink_file_stats_skipping"]
+    subprocess.run(
+        [sys.executable, "-c", _BUILD_AND_COLLECT, sf_dir, *names],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        check=True,
+        timeout=600,
+    )
+    assert not os.listdir(tmp_path)

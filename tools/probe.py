@@ -15,12 +15,14 @@ time   Warms each query once, then runs it N times (default 3): build (the
        Python/py4j plan build, eager jobs included), then a noop sink, each
        inside a ``perfbench/spans.py`` Tracer span, measuring the bytes the
        query left cached and clearing the cache after every run. Reports the
-       best run (least build+sink): build/sink seconds, the build's py4j
-       round trips (``build_py4j_calls``), eager vs sink jobs,
+       best run (least build+sink): build/sink seconds, eager vs sink jobs,
        stages, tasks, executor run/CPU/GC time, input, shuffle and spill
        bytes, cached bytes left before ``clearCache()``, the persistent
        RDDs (count and bytes) the run still left after it, and every
-       run's total.
+       run's total. ``build_py4j_calls`` is the build's py4j round trips
+       but proxy frees (``build_py4j_frees``), which land whenever Python
+       drops an older proxy; each run counts after a ``gc.collect()``, and
+       the report keeps the least over the runs.
 
 ab     Warms both arms and keeps their rows, then runs N reps (default 6),
        alternating which arm goes first. Before each rep it waits, up to
@@ -49,6 +51,7 @@ from __future__ import annotations
 
 import argparse
 import functools
+import gc
 import importlib.util
 import json
 import os
@@ -138,6 +141,7 @@ def run_once(spark, name: str, build, sf_dir: str) -> dict:
     tr = tracer(spark)
     cached_before = tr.cached_bytes()
     rdds_before = persistent_rdds(spark)
+    gc.collect()  # free the garbage of earlier runs outside the window
     with tr.span("build", op=name) as b:
         with count_py4j_calls() as calls:
             df = build(spark, sf_dir)
@@ -148,7 +152,8 @@ def run_once(spark, name: str, build, sf_dir: str) -> dict:
         "build_s": build_s,
         "sink_s": sink_s,
         "total_s": build_s + sink_s,
-        "build_py4j_calls": calls[0],
+        "build_py4j_calls": calls[0] - calls[1],
+        "build_py4j_frees": calls[1],
         "eager_jobs": b["jobs"],
         "sink_jobs": s["jobs"],
         **{k: b[k] + s[k] for k in ("stages", "tasks", *STAGE_FIELDS)},
@@ -173,7 +178,9 @@ def time_query(spark, name: str, sf_dir: str, runs: int) -> dict:
         "query": name,
         "sf_dir": sf_dir,
         **best,
+        "build_py4j_calls": min(r["build_py4j_calls"] for r in recs),
         "runs_total_s": [r["total_s"] for r in recs],
+        "runs_build_py4j_calls": [r["build_py4j_calls"] for r in recs],
         "load1": round(os.getloadavg()[0], 2),
     }
 
