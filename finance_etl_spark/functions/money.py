@@ -41,7 +41,7 @@ def o_dsum(expr: str) -> str:
     """DuckDB twin of dsum. The final cast routes through VARCHAR
     because DuckDB's int128→double conversion differs from a
     correctly-rounded decimal→double by 1 ulp."""
-    return f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)"
+    return f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(30,10))) AS STRING) AS DOUBLE)"
 
 
 def davg(col: Column | str, dec: str = DEC) -> Column:
@@ -75,7 +75,7 @@ def o_fsum(expr: str, scale: int = 6) -> str:
     """DuckDB twin of fsum."""
     return (
         f"CAST(CAST(SUM(CAST(FLOOR(({expr}) * 1e{scale})"
-        f" AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1e{scale}"
+        f" AS DECIMAL(38,0))) AS STRING) AS DOUBLE) / 1e{scale}"
     )
 
 
@@ -107,7 +107,7 @@ def o_lsum(expr: str, scale: int = 6) -> str:
 
 def as_d(c: Column) -> Column:
     """Decimal → double via the VARCHAR route (cross-engine exact).
-    DuckDB twin: CAST(CAST(x AS VARCHAR) AS DOUBLE)."""
+    DuckDB twin: CAST(CAST(x AS STRING) AS DOUBLE)."""
     return c.cast("string").cast("double")
 
 

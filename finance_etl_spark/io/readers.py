@@ -125,10 +125,11 @@ def csv_header_schema(
     univocity under the read's ``CSVOptions`` and named by
     ``CSVUtils.makeSafeHeader``, the calls inference makes, so BOMs,
     quoting, duplicate and empty names come out the same."""
+    client = spark.sparkContext._gateway._gateway_client
     Path, GlobFilter, PythonUtils, CSVOptions, CsvParser, CSVUtils = (
-        JavaClass(name, spark.sparkContext._gateway._gateway_client)
-        for name in _CSV_HEADER_CLASSES
+        JavaClass(name, client) for name in _CSV_HEADER_CLASSES
     )
+    to_json = _field_json_writer(client)
     jspark = spark._jsparkSession
     state = jspark.sessionState()
     conf = state.conf()
@@ -137,7 +138,12 @@ def csv_header_schema(
     statuses = root.getFileSystem(hconf).listStatus(
         root, GlobFilter(options["pathGlobFilter"])
     )
-    files = [(n, st) for st in statuses if (n := st.getLen()) > 0]
+    # one round trip for every status, not one per file
+    files = [
+        (st["length"], i)
+        for i, st in enumerate(to_json(statuses))
+        if st["length"] > 0
+    ]
     if not files:
         return None
     # FilePartition.maxSplitBytes over the matched files
@@ -155,13 +161,36 @@ def csv_header_schema(
         conf.csvColumnPruning(),
         conf.sessionLocalTimeZone(),
     )
-    for _, st in files:
-        line = CSVUtils.readHeaderLine(st.getPath(), opts, hconf)
+    for _, i in files:
+        line = CSVUtils.readHeaderLine(statuses[i].getPath(), opts, hconf)
         if line.isDefined():
             row = CsvParser(opts.asParserSettings()).parseLine(line.get())
             names = CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis(), opts)
-            return StructType([StructField(n, StringType()) for n in names])
+            return StructType([StructField(n, StringType()) for n in to_json(names)])
     return None
+
+
+def _field_json_writer(client):
+    """``to_json(obj)``: ``obj`` serialized by Jackson from its fields
+    (not its getters), parsed in Python: a Java array comes back in one
+    round trip instead of one per element. A Hadoop ``FileStatus`` reads
+    as ``{"path": {"uri": ...}, "length": ..., ...}``; its getters are
+    not called, so a local file's owner is never looked up."""
+    Mapper, Accessor, Visibility = (
+        JavaClass(name, client) for name in _JSON_CLASSES
+    )
+    mapper = Mapper()
+    mapper.setVisibility(Accessor.ALL, Visibility.NONE).setVisibility(
+        Accessor.FIELD, Visibility.ANY
+    )
+    return lambda obj: json.loads(mapper.writeValueAsString(obj))
+
+
+_JSON_CLASSES = (
+    "com.fasterxml.jackson.databind.ObjectMapper",
+    "com.fasterxml.jackson.annotation.PropertyAccessor",
+    "com.fasterxml.jackson.annotation.JsonAutoDetect$Visibility",
+)
 
 
 _CSV_HEADER_CLASSES = (

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 import finance_etl_spark.plans.text  # noqa: F401  (registers the pairs query)
-from finance_etl_spark.functions.money import DEC, as_d, dsum, o_dsum
+from finance_etl_spark.functions.money import as_d, dsum, o_dsum
 from finance_etl_spark.io.readers import load_table, load_table_parallel
 from finance_etl_spark.operators.components import (
     connected_components,
@@ -41,16 +41,16 @@ from finance_etl_spark.plans.recipes import (
     trade_edges_undirected,
     trade_pairs,
 )
-from finance_etl_spark.plans.registry import get, register, scratch_dir
+from finance_etl_spark.plans.registry import get, register, run_sql, scratch_dir
 
 
 @register(
     "cur_hash_split",
     tags=("curation", "split"),
     oracle=f"""
-        SELECT CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{HASH_SPLIT_TRAIN_HI}'
+        SELECT CASE WHEN substr(md5(CAST(doc_id AS STRING)), 1, 2) < '{HASH_SPLIT_TRAIN_HI}'
                       THEN 'train'
-                    WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{HASH_SPLIT_VAL_HI}'
+                    WHEN substr(md5(CAST(doc_id AS STRING)), 1, 2) < '{HASH_SPLIT_VAL_HI}'
                       THEN 'val'
                     ELSE 'test' END AS split,
                COUNT(*) AS n_docs,
@@ -66,22 +66,7 @@ def cur_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     growing: membership depends only on the id, never on row order,
     partitioning, or corpus size. One hash-aggregate, no shuffle of the
     text payload (only the stats columns move)."""
-    d = load_table(spark, sf_dir, "documents")
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    split = (
-        F.when(bucket < HASH_SPLIT_TRAIN_HI, "train")
-        .when(bucket < HASH_SPLIT_VAL_HI, "val")
-        .otherwise("test")
-    )
-    return (
-        d.select(split.alias("split"), "n_chars")
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.avg("n_chars").alias("avg_chars"),
-        )
-    )
+    return run_sql(spark, sf_dir, "cur_hash_split")
 
 
 # Composite quality rules (Gopher-style, arithmetic-only so every rule
@@ -231,16 +216,7 @@ def cur_cdc_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic. One hash-partitioned window — the standard CDC
     upsert-log → snapshot shape; at scale the partition count follows
     the key cardinality and no global sort ever happens."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    return (
-        o.select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return run_sql(spark, sf_dir, "cur_cdc_latest_per_key")
 
 
 @register(
@@ -267,15 +243,7 @@ def cur_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric sinks want. Aggregates first (decimal-exact), unpivots the
     3-column result: the expensive reshape happens on the already-tiny
     aggregate, never on the fact table."""
-    li = load_table(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_returnflag").agg(
-        dsum("l_quantity").alias("sum_qty"),
-        dsum("l_extendedprice").alias("sum_price"),
-        dsum("l_discount").alias("sum_disc"),
-    )
-    return agg.unpivot(
-        ["l_returnflag"], ["sum_qty", "sum_price", "sum_disc"], "measure", "value"
-    )
+    return run_sql(spark, sf_dir, "cur_unpivot_measures")
 
 
 # Per-language sampling rates for the stratified sample (hash-gated, so
@@ -525,17 +493,7 @@ def cur_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     count follows key cardinality, nothing global. Ties broken by
     o_orderkey so the interval chain is deterministic.
     """
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    valid_to = F.lead("o_orderdate").over(w)
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.col("o_orderdate").alias("valid_from"),
-        valid_to.alias("valid_to"),
-        valid_to.isNull().alias("is_current"),
-        "o_totalprice",
-    )
+    return run_sql(spark, sf_dir, "cur_scd2_intervals")
 
 
 @register(
@@ -585,39 +543,7 @@ def cur_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Column comparison is explicit (<>) so the diff columns
     are declared, not inferred from a row hash — at 100 TB you diff
     the columns that matter, not the whole width."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    old = o.filter(F.col("o_orderkey") % 10 != 0)
-    new = o.filter(F.col("o_orderkey") % 11 != 0).withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderkey") % 7 == 0, F.col("o_totalprice") + 1.0
-        ).otherwise(F.col("o_totalprice")),
-    )
-    j = old.alias("o").join(
-        new.alias("n"),
-        F.col("o.o_orderkey") == F.col("n.o_orderkey"),
-        "full_outer",
-    )
-    added = F.col("o.o_orderkey").isNull()
-    removed = F.col("n.o_orderkey").isNull()
-    changed = (
-        F.col("o.o_orderkey").isNotNull()
-        & F.col("n.o_orderkey").isNotNull()
-        & (
-            (F.col("o.o_totalprice") != F.col("n.o_totalprice"))
-            | (F.col("o.o_orderstatus") != F.col("n.o_orderstatus"))
-        )
-    )
-    return j.agg(
-        F.sum(added.cast("long")).alias("n_added"),
-        F.sum(removed.cast("long")).alias("n_removed"),
-        F.sum(changed.cast("long")).alias("n_changed"),
-        F.sum(
-            (~added & ~removed & ~changed).cast("long")
-        ).alias("n_unchanged"),
-    )
+    return run_sql(spark, sf_dir, "cur_snapshot_diff")
 
 
 @register(
@@ -1085,7 +1011,7 @@ def cur_winsorize_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT user_id, v,
                    COALESCE(v,
                             CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) OVER w
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                             / COUNT(v) OVER w) AS v_imp
             FROM ev
             WINDOW w AS (PARTITION BY user_id)
@@ -1093,7 +1019,7 @@ def cur_winsorize_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT user_id,
                CAST(COUNT(*) AS BIGINT) AS n_events,
                CAST(COUNT(*) - COUNT(v) AS BIGINT) AS n_imputed,
-               CAST(CAST(SUM(CAST(v_imp AS DECIMAL(30,10))) AS VARCHAR)
+               CAST(CAST(SUM(CAST(v_imp AS DECIMAL(30,10))) AS STRING)
                     AS DOUBLE) AS total_after_impute
         FROM imp
         GROUP BY user_id
@@ -1108,28 +1034,7 @@ def cur_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     as double / non-null count (the davg contract), so both engines
     impute bit-identical values; the imputed column then re-enters a
     decimal sum, keeping the output order-independent."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.when(F.col("event_id") % 13 == 0, F.lit(None))
-        .otherwise(F.col("value"))
-        .alias("v"),
-    )
-    w = Window.partitionBy("user_id")
-    mean_v = (
-        F.sum(F.col("v").cast(DEC)).over(w).cast("double")
-        / F.count("v").over(w)
-    )
-    return (
-        ev.select(
-            "user_id", "v", F.coalesce(F.col("v"), mean_v).alias("v_imp")
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.count(F.lit(1)) - F.count("v")).alias("n_imputed"),
-            dsum("v_imp").alias("total_after_impute"),
-        )
-    )
+    return run_sql(spark, sf_dir, "cur_impute_group_mean")
 
 
 @register(
@@ -1403,32 +1308,7 @@ def cur_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     by versions-per-customer (~orders per customer), never a
     nested-loop range join. Aggregated by whether the covering version
     is the current one."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    dim = o.select(
-        "o_custkey",
-        F.col("o_orderdate").alias("valid_from"),
-        F.lead("o_orderdate").over(w).alias("valid_to"),
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_shipdate", "l_quantity"
-    )
-    fact = li.join(
-        o.select("o_orderkey", F.col("o_custkey").alias("custkey")),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    ).select("custkey", "l_shipdate", "l_quantity")
-    joined = fact.join(
-        dim,
-        (F.col("custkey") == F.col("o_custkey"))
-        & (F.col("l_shipdate") >= F.col("valid_from"))
-        & (F.col("valid_to").isNull() | (F.col("l_shipdate") < F.col("valid_to"))),
-    )
-    return joined.groupBy(
-        F.col("valid_to").isNull().alias("matched_current_version")
-    ).agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        dsum("l_quantity").alias("sum_qty"),
-    )
+    return run_sql(spark, sf_dir, "cur_scd2_point_in_time")
 
 
 _DOMAIN_CAP = 15
@@ -1442,7 +1322,7 @@ _DOMAIN_CAP = 15
             SELECT doc_id, source,
                    CAST(ROW_NUMBER() OVER (
                        PARTITION BY source
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+                       ORDER BY md5(CAST(doc_id AS STRING)), doc_id
                    ) AS INT) AS slot
             FROM documents
         )
@@ -1457,14 +1337,7 @@ def cur_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-stable lottery, not arrival order, so reruns and
     relayouts keep the SAME documents. Per-domain state is one
     counter; no global sort, no driver-side anything."""
-    d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        d.select("doc_id", "source", F.row_number().over(w).alias("slot"))
-        .filter(F.col("slot") <= _DOMAIN_CAP)
-    )
+    return run_sql(spark, sf_dir, "cur_domain_cap")
 
 
 _BFS_EDGES_SQL = """
@@ -1564,14 +1437,10 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation, market segment): any equivalence class smaller than k=5
     re-identifies its members and must be suppressed or generalized
     before the table leaves the trust boundary. One hash aggregation —
-    the same partial-merge shape as any groupBy count, so the audit
+    the same partial-merge shape as any GROUP BY count, so the audit
     runs at billion-row scale for the cost of one shuffle of the
     class keys."""
-    c = load_table(spark, sf_dir, "customer")
-    return c.groupBy("c_nationkey", "c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.count(F.lit(1)) >= 5).alias("k_anonymous"),
-    )
+    return run_sql(spark, sf_dir, "dq_k_anonymity")
 
 
 @register(
@@ -1580,7 +1449,7 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT doc_id, source
         FROM documents
-        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+        ORDER BY md5(CAST(doc_id AS STRING)), doc_id
         LIMIT 100
     """,
 )
@@ -1594,17 +1463,7 @@ def cur_sample_exact_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     relayouts, and cluster size changes keep the same sample), which
     hash-RATE sampling (cur_hash_split) cannot promise when the ask
     is an exact row budget."""
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select(
-            "doc_id",
-            "source",
-            F.md5(F.col("doc_id").cast("string")).alias("__lot"),
-        )
-        .orderBy("__lot", "doc_id")
-        .limit(100)
-        .drop("__lot")
-    )
+    return run_sql(spark, sf_dir, "cur_sample_exact_n")
 
 
 @register("cur_sample_tablesample", tags=("curation", "sampling", "sql"))
@@ -1693,68 +1552,7 @@ def cur_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the differential check proves all five variants collapse to the
     same canonical form. One hash shuffle on the canonical key; the
     string surgery is a codegen'd map-side projection."""
-    o = load_table(spark, sf_dir, "orders")
-    art = (F.col("o_orderkey") % 1000).cast("string")
-    v = F.col("o_orderkey") % 5
-    url = (
-        F.when(v == 0, F.concat(F.lit("https://news.example.com/article/"), art))
-        .when(
-            v == 1,
-            F.concat(
-                F.lit("https://NEWS.EXAMPLE.COM/article/"), art,
-                F.lit("?utm_source=feed"),
-            ),
-        )
-        .when(
-            v == 2,
-            F.concat(
-                F.lit("https://www.news.example.com/article/"), art, F.lit("#top")
-            ),
-        )
-        .when(
-            v == 3,
-            F.concat(
-                F.lit("https://news.example.com:443/article/"), art,
-                F.lit("?utm_medium=email&utm_campaign=x"),
-            ),
-        )
-        .otherwise(
-            F.concat(F.lit("https://news.example.com/article/"), art, F.lit("/"))
-        )
-    )
-    log = o.select("o_orderkey", url.alias("url"))
-    stripped = F.regexp_replace(F.col("url"), "#.*$", "")
-    host = F.regexp_replace(
-        F.lower(F.parse_url(stripped, F.lit("HOST"))), r"^www\.", ""
-    )
-    path = F.regexp_replace(F.parse_url(stripped, F.lit("PATH")), "/$", "")
-    q = F.parse_url(stripped, F.lit("QUERY"))
-    kept = F.array_join(
-        F.filter(
-            F.split(F.coalesce(q, F.lit("")), "&"),
-            lambda p: (p != "") & ~p.startswith("utm_"),
-        ),
-        "&",
-    )
-    canonical = F.concat(
-        F.lit("https://"), host, path,
-        F.when(kept != "", F.concat(F.lit("?"), kept)).otherwise(F.lit("")),
-    )
-    return (
-        log.select("o_orderkey", canonical.alias("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(
-            F.count(F.lit(1)).alias("n_crawls"),
-            F.min("o_orderkey").alias("first_seen"),
-        )
-        .select(
-            "canonical_url",
-            F.parse_url(F.col("canonical_url"), F.lit("HOST")).alias("host"),
-            "n_crawls",
-            "first_seen",
-        )
-        .orderBy("canonical_url")
-    )
+    return run_sql(spark, sf_dir, "cur_url_dedup")
 
 
 @register(
@@ -2103,42 +1901,7 @@ def dq_fk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg), so the audit touches each fact column once regardless of
     table volume — the schema-inference pass a lakehouse catalog runs
     over unfamiliar data."""
-    cases = [
-        ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("orders", "o_custkey", "customer", "c_custkey"),
-        ("customer", "c_nationkey", "nation", "n_nationkey"),
-        ("orders", "o_orderkey", "customer", "c_custkey"),
-    ]
-    out = None
-    for ct, cc, pt, pc in cases:
-        child = load_table(spark, sf_dir, ct).select(cc).distinct()
-        parent = load_table(spark, sf_dir, pt)
-        p_stats = parent.agg(
-            F.countDistinct(pc).alias("p_distinct"),
-            F.count(F.lit(1)).alias("p_rows"),
-        )
-        contained = child.join(
-            parent.select(pc).distinct(),
-            child[cc] == F.col(pc),
-            "left_semi",
-        )
-        row = (
-            child.agg(F.count(F.lit(1)).alias("n_child_distinct"))
-            .crossJoin(contained.agg(F.count(F.lit(1)).alias("n_contained")))
-            .crossJoin(F.broadcast(p_stats))
-            .select(
-                F.lit(f"{ct}.{cc}").alias("child_col"),
-                F.lit(f"{pt}.{pc}").alias("parent_col"),
-                "n_child_distinct",
-                "n_contained",
-                (
-                    (F.col("n_contained") == F.col("n_child_distinct"))
-                    & (F.col("p_distinct") == F.col("p_rows"))
-                ).alias("is_fk"),
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("child_col", "parent_col")
+    return run_sql(spark, sf_dir, "dq_fk_inference")
 
 
 def dp_noisy_counts(
@@ -2460,7 +2223,7 @@ def cur_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
                CAST(COUNT(*) FILTER (WHERE rn_total = 2) AS BIGINT) AS n_corrected,
-               CAST(CAST(SUM(amount) AS VARCHAR) AS DOUBLE) AS book_value
+               CAST(CAST(SUM(amount) AS STRING) AS DOUBLE) AS book_value
         FROM (
             SELECT *, COUNT(*) OVER (PARTITION BY o_orderkey) AS rn_total
             FROM pit
@@ -2483,50 +2246,7 @@ def cur_bitemporal_asknown(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-known selection is one row_number window per order key —
     identical shape to CDC latest-per-key, just filtered on BOTH time
     axes first so state never includes future knowledge."""
-    o = load_table(spark, sf_dir, "orders")
-    od = F.col("o_orderdate").cast("date")
-    # corrections stay DECIMAL end-to-end: 0.9 x a 2-decimal price is
-    # exactly 3 decimals — a double product re-quantized to decimal is
-    # divergence class 2 (registry docstring)
-    v1 = o.select(
-        "o_orderkey",
-        F.col("o_totalprice").cast(DEC).alias("amount"),
-        od.alias("valid_from"),
-        od.alias("known_from"),
-    )
-    v2 = o.filter(F.col("o_orderstatus") == "F").select(
-        "o_orderkey",
-        (F.col("o_totalprice").cast(DEC) * F.lit("0.9").cast("decimal(2,1)"))
-        .cast(DEC)
-        .alias("amount"),
-        od.alias("valid_from"),
-        F.date_add(od, 30).alias("known_from"),
-    )
-    import datetime as dt
-
-    valid_cut, known_cut = dt.date(1996, 12, 31), dt.date(1997, 1, 15)
-    pit = (
-        v1.unionByName(v2)
-        .filter(
-            (F.col("valid_from") <= F.lit(valid_cut))
-            & (F.col("known_from") <= F.lit(known_cut))
-        )
-    )
-    w = Window.partitionBy("o_orderkey").orderBy(
-        F.col("known_from").desc(), F.col("amount").asc()
-    )
-    latest = pit.select(
-        "*",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("o_orderkey")).alias(
-            "rn_total"
-        ),
-    ).filter(F.col("rn") == 1)
-    return latest.agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.count(F.when(F.col("rn_total") == 2, 1)).alias("n_corrected"),
-        F.sum("amount").cast("double").alias("book_value"),
-    )
+    return run_sql(spark, sf_dir, "cur_bitemporal_asknown")
 
 
 @register(
@@ -3174,13 +2894,13 @@ _TEMP_EPOCH_DOCS = 100_000  # docs drawn per training epoch
         )
         SELECT source, lang, n_docs,
                n_docs / CAST(total_docs AS DOUBLE) AS p_raw,
-               CAST(CAST(wq AS VARCHAR) AS DOUBLE)
-                 / CAST(CAST(total_wq AS VARCHAR) AS DOUBLE) AS p_temp,
-               (CAST(CAST(wq AS VARCHAR) AS DOUBLE)
-                 / CAST(CAST(total_wq AS VARCHAR) AS DOUBLE))
+               CAST(CAST(wq AS STRING) AS DOUBLE)
+                 / CAST(CAST(total_wq AS STRING) AS DOUBLE) AS p_temp,
+               (CAST(CAST(wq AS STRING) AS DOUBLE)
+                 / CAST(CAST(total_wq AS STRING) AS DOUBLE))
                  / (n_docs / CAST(total_docs AS DOUBLE)) AS upsample,
-               CAST(FLOOR(CAST(CAST(wq AS VARCHAR) AS DOUBLE)
-                 / CAST(CAST(total_wq AS VARCHAR) AS DOUBLE)
+               CAST(FLOOR(CAST(CAST(wq AS STRING) AS DOUBLE)
+                 / CAST(CAST(total_wq AS STRING) AS DOUBLE)
                  * {_TEMP_EPOCH_DOCS}) AS BIGINT) AS epoch_docs
         FROM per_dom, tot
         ORDER BY source, lang
@@ -3199,36 +2919,7 @@ def cur_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hash agg keyed by domain + a 1-row broadcast cross join —
     corpus-scale work is only the count; domains are registry-bounded
     at any SF."""
-    d = load_table(spark, sf_dir, "documents")
-    per_dom = d.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    per_dom = per_dom.withColumn(
-        "wq",
-        F.floor(F.sqrt(F.col("n_docs").cast("double")) * F.lit(1e6)).cast(
-            "decimal(38,0)"
-        ),
-    )
-    tot = per_dom.agg(
-        F.sum("n_docs").alias("total_docs"), F.sum("wq").alias("total_wq")
-    )
-    p_raw = F.col("n_docs") / F.col("total_docs").cast("double")
-    p_temp = F.col("wq").cast("double") / F.col("total_wq").cast("double")
-    return (
-        per_dom.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "lang",
-            "n_docs",
-            p_raw.alias("p_raw"),
-            p_temp.alias("p_temp"),
-            (p_temp / p_raw).alias("upsample"),
-            F.floor(p_temp * F.lit(_TEMP_EPOCH_DOCS))
-            .cast("bigint")
-            .alias("epoch_docs"),
-        )
-        .orderBy("source", "lang")
-    )
+    return run_sql(spark, sf_dir, "cur_mixture_temperature")
 
 
 # ---------------------------------------------------------------------------
@@ -3259,11 +2950,11 @@ def cur_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         agg AS (
             SELECT COUNT(*) AS m,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(x * x) AS VARCHAR) AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(y * y) AS VARCHAR) AS DOUBLE) AS syy,
-                   CAST(CAST(SUM(x * y) AS VARCHAR) AS DOUBLE) AS sxy
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(y) AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(x * x) AS STRING) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(y * y) AS STRING) AS DOUBLE) AS syy,
+                   CAST(CAST(SUM(x * y) AS STRING) AS DOUBLE) AS sxy
             FROM j
         )
         SELECT CAST(m AS BIGINT) AS n_edges,
@@ -3283,39 +2974,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE expression. At scale the joins shuffle on the natural edge
     keys, degree maps partial-aggregate map-side, and the driver sees
     one row."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    dc = e.groupBy("c").agg(F.count(F.lit(1)).alias("dc"))
-    ds = e.groupBy("s").agg(F.count(F.lit(1)).alias("ds"))
-    dec = "decimal(38,0)"
-    j = (
-        e.join(dc, "c")
-        .join(ds, "s")
-        .select(
-            F.col("dc").cast(dec).alias("x"), F.col("ds").cast(dec).alias("y")
-        )
-    )
-    agg = j.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("double").alias("sxy"),
-    )
-    m = F.col("m").cast("double")
-    r = (m * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.sqrt(m * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * F.sqrt(m * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
-    return agg.select(
-        F.col("m").cast("bigint").alias("n_edges"), r.alias("assortativity")
-    )
+    return run_sql(spark, sf_dir, "graph_degree_assortativity")
 
 
 # ---------------------------------------------------------------------------
@@ -4975,38 +4634,7 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     levenshtein profile documents. All counts are exact integers; the
     histogram output is bounded by the cap. Popular-part recall loss
     is the documented trade-off (same as minhash's banding)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cp = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    pdeg = cp.groupBy("p").agg(F.count(F.lit(1)).alias("dp")).filter(
-        F.col("dp") <= 40
-    )
-    capped = cp.join(pdeg.select("p"), "p")
-    a = capped.select("p", F.col("c").alias("c1"))
-    b = capped.select("p", F.col("c").alias("c2"))
-    proj = (
-        a.join(b, "p")
-        .filter(F.col("c1") < F.col("c2"))
-        .groupBy("c1", "c2")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-    )
-    return (
-        proj.groupBy("w")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.min("c1").cast("bigint").alias("min_c1"),
-            F.max("c2").cast("bigint").alias("max_c2"),
-        )
-        .select(
-            F.col("w").cast("bigint").alias("weight"), "n_pairs", "min_c1",
-            "max_c2",
-        )
-        .orderBy("weight")
-    )
+    return run_sql(spark, sf_dir, "graph_bipartite_projection")
 
 
 # ---------------------------------------------------------------------------

@@ -38,17 +38,15 @@ from finance_etl_spark.plans.recipes import (
     SEG_PNL_DAILY_SQL,
     SEG_RET_SQL,
     dd_q6,
-    market_model_sums,
     mkt_returns,
     ncdf_sql,
     o_dd_q6,
     o_ret_q9,
     ret_q9,
     seg_daily,
-    seg_pnl_daily,
     seg_returns,
 )
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, run_sql
 
 # Quarterly FX spine bounds covering the orders fixture (1995-01..2001-08).
 _FX_START, _FX_END = "1995-01-01", "2001-07-01"
@@ -188,13 +186,13 @@ def fin_fx_convert_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                    -CAST(o_totalprice AS DECIMAL(30,10))
             FROM orders WHERE o_orderstatus = 'F'
         )
-        SELECT COALESCE(CAST(yr AS VARCHAR), 'ALL') AS yr,
+        SELECT COALESCE(CAST(yr AS STRING), 'ALL') AS yr,
                COALESCE(account, 'ALL') AS account,
-               CAST(CAST(SUM(CASE WHEN amt > 0 THEN amt ELSE 0 END) AS VARCHAR)
+               CAST(CAST(SUM(CASE WHEN amt > 0 THEN amt ELSE 0 END) AS STRING)
                     AS DOUBLE) AS debits,
-               CAST(CAST(SUM(CASE WHEN amt < 0 THEN -amt ELSE 0 END) AS VARCHAR)
+               CAST(CAST(SUM(CASE WHEN amt < 0 THEN -amt ELSE 0 END) AS STRING)
                     AS DOUBLE) AS credits,
-               CAST(CAST(SUM(amt) AS VARCHAR) AS DOUBLE) AS balance
+               CAST(CAST(SUM(amt) AS STRING) AS DOUBLE) AS balance
         FROM postings
         GROUP BY GROUPING SETS ((yr, account), ())
     """,
@@ -210,45 +208,7 @@ def fin_trial_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side (no shuffle) and the grand-total cell aggregates partials,
     not rows. Reference parity: data_manager.py:85-89's signed-amount
     normalization (T11) is what makes amounts post-able."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.year("o_orderdate").alias("yr"),
-        "o_orderstatus",
-        F.col("o_totalprice").cast(DEC).alias("amt"),
-    )
-    post = lambda acct, sign, flt: (  # noqa: E731
-        (orders.filter(flt) if flt is not None else orders).select(
-            "yr", F.lit(acct).alias("account"), (sign * F.col("amt")).alias("amt")
-        )
-    )
-    settled = F.col("o_orderstatus") == "F"
-    postings = (
-        post("AR", F.lit(1), None)
-        .unionByName(post("REVENUE", F.lit(-1), None))
-        .unionByName(post("CASH", F.lit(1), settled))
-        .unionByName(post("AR", F.lit(-1), settled))
-    )
-    zero = F.lit(0).cast(DEC)
-    return (
-        postings.groupingSets(
-            [[F.col("yr"), F.col("account")], []], F.col("yr"), F.col("account")
-        )
-        .agg(
-            F.sum(F.when(F.col("amt") > 0, F.col("amt")).otherwise(zero))
-            .cast("double")
-            .alias("debits"),
-            F.sum(F.when(F.col("amt") < 0, -F.col("amt")).otherwise(zero))
-            .cast("double")
-            .alias("credits"),
-            F.sum("amt").cast("double").alias("balance"),
-        )
-        .select(
-            F.coalesce(F.col("yr").cast("string"), F.lit("ALL")).alias("yr"),
-            F.coalesce(F.col("account"), F.lit("ALL")).alias("account"),
-            "debits",
-            "credits",
-            "balance",
-        )
-    )
+    return run_sql(spark, sf_dir, "fin_trial_balance")
 
 
 @register(
@@ -342,39 +302,7 @@ def fin_reconciliation_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic amount matching. Reference parity: the incremental loads
     in data_manager.py:172-201 assume feeds reconcile; this op is the
     audit for that assumption."""
-    orders = load_table(spark, sf_dir, "orders")
-
-    def side(mod: int) -> DataFrame:
-        w = Window.partitionBy("o_custkey", "o_totalprice").orderBy(
-            "o_orderdate", "o_orderkey"
-        )
-        return (
-            orders.filter(F.col("o_orderkey") % mod != 0)
-            .select("o_custkey", "o_totalprice", "o_orderdate", "o_orderkey")
-            .withColumn("rn", F.row_number().over(w))
-            .select("o_custkey", "o_totalprice", "rn")
-        )
-
-    b = side(13).alias("b")
-    l = side(7).alias("l")
-    joined = b.join(
-        l,
-        (F.col("b.o_custkey") == F.col("l.o_custkey"))
-        & (F.col("b.o_totalprice") == F.col("l.o_totalprice"))
-        & (F.col("b.rn") == F.col("l.rn")),
-        "full_outer",
-    )
-    status = (
-        F.when(F.col("l.o_custkey").isNull(), F.lit("missing_in_ledger"))
-        .when(F.col("b.o_custkey").isNull(), F.lit("missing_in_bank"))
-        .otherwise(F.lit("matched"))
-    )
-    return joined.groupBy(status.alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum(F.coalesce(F.col("b.o_totalprice"), F.col("l.o_totalprice"))).alias(
-            "amount"
-        ),
-    )
+    return run_sql(spark, sf_dir, "fin_reconciliation_match")
 
 
 @register(
@@ -548,7 +476,7 @@ def fin_settlement_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM daily
         )
         SELECT segment, n AS n_days,
-               CAST(CAST(net AS VARCHAR) AS DOUBLE) AS var_5pct
+               CAST(CAST(net AS STRING) AS DOUBLE) AS var_5pct
         FROM ranked
         WHERE rn = CAST(ceil(0.05 * n) AS BIGINT)
     """,
@@ -565,33 +493,7 @@ def fin_var_historical(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-segment ranking windows partition on segment — day counts per
     segment are bounded by the calendar, not the SF, so the window
     never becomes the scale bottleneck."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    signed = F.col("o_totalprice").cast(DEC) * F.when(
-        F.col("o_orderstatus") == "F", 1
-    ).otherwise(-1)
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(F.sum(signed).alias("net"))
-    )
-    w = Window.partitionBy("segment").orderBy("net", "d")
-    ranked = daily.select(
-        "segment",
-        "net",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("segment")).alias("n"),
-    )
-    return ranked.filter(
-        F.col("rn") == F.ceil(F.lit(0.05) * F.col("n")).cast("long")
-    ).select(
-        "segment",
-        F.col("n").alias("n_days"),
-        F.col("net").cast("double").alias("var_5pct"),
-    )
+    return run_sql(spark, sf_dir, "fin_var_historical")
 
 
 # Progressive fee schedule: (lower bound, marginal rate in basis points).
@@ -657,8 +559,8 @@ def _tier_fee_sql(amount: str) -> str:
                          WHEN volume < 1600000 THEN 4
                          ELSE 5 END AS INT) AS vol_bucket,
                CAST(COUNT(*) AS BIGINT) AS n_customers,
-               CAST(CAST(SUM(volume) AS VARCHAR) AS DOUBLE) AS total_volume,
-               CAST(CAST(SUM(fee_bps) AS VARCHAR) AS DOUBLE) / 10000.0
+               CAST(CAST(SUM(volume) AS STRING) AS DOUBLE) AS total_volume,
+               CAST(CAST(SUM(fee_bps) AS STRING) AS DOUBLE) / 10000.0
                    AS total_fees
         FROM fees GROUP BY 1
     """,
@@ -671,33 +573,11 @@ def fin_fee_tiering(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one division by 10^4 happens on the aggregated total. Report:
     per volume-quartile bucket, customers, volume, and fee take.
 
-    Scale: one groupBy per customer (partial-agg), then pure map-side
+    Scale: one GROUP BY per customer (partial-agg), then pure map-side
     bracket math — the progressive formula is a closed-form
     least/greatest chain, NOT a join against a tier table, so adding
     tiers changes an expression, never the shuffle count."""
-    o = load_table(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast(DEC)).alias("volume")
-    )
-    fees = cust.withColumn("fee_bps", _tier_fee_expr(F.col("volume")))
-    return (
-        fees.groupBy(
-            F.when(F.col("volume") < 400000, 1)
-            .when(F.col("volume") < 800000, 2)
-            .when(F.col("volume") < 1200000, 3)
-            .when(F.col("volume") < 1600000, 4)
-            .otherwise(5)
-            .cast("int")
-            .alias("vol_bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("volume").cast("double").alias("total_volume"),
-            (F.sum("fee_bps").cast("double") / F.lit(10000.0)).alias(
-                "total_fees"
-            ),
-        )
-    )
+    return run_sql(spark, sf_dir, "fin_fee_tiering")
 
 
 @register(
@@ -1081,72 +961,7 @@ def fin_currency_triangulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     not per-row, so no float accumulates and the division happens once
     per cell. Rates and nation dims broadcast; the only corpus-scale
     work is the filtered fact join."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate")
-        .cast("date")
-        .between(F.lit("1997-01-01"), F.lit("1997-03-31"))
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    rates = nation.select(
-        "n_nationkey",
-        (F.lit(1000) + F.col("n_nationkey") * 10 + F.lit((1997 - 1995) * 4))
-        .cast("int")
-        .alias("rate_milli"),
-    )
-    fact = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("s_nationkey").alias("supp_nation"),
-            F.col("c_nationkey").alias("cust_nation"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            dsum("l_extendedprice").alias("supp_ccy_total"),
-        )
-    )
-    rs = rates.select(
-        F.col("n_nationkey").alias("supp_nation"),
-        F.col("rate_milli").alias("rs_milli"),
-    )
-    rc = rates.select(
-        F.col("n_nationkey").alias("cust_nation"),
-        F.col("rate_milli").alias("rc_milli"),
-    )
-    ns = nation.select(
-        F.col("n_nationkey").alias("supp_nation"),
-        F.col("n_name").alias("supp_name"),
-    )
-    nc = nation.select(
-        F.col("n_nationkey").alias("cust_nation"),
-        F.col("n_name").alias("cust_name"),
-    )
-    return (
-        fact.join(F.broadcast(rs), "supp_nation")
-        .join(F.broadcast(rc), "cust_nation")
-        .join(F.broadcast(ns), "supp_nation")
-        .join(F.broadcast(nc), "cust_nation")
-        .select(
-            F.col("supp_name").alias("supp_nation"),
-            F.col("cust_name").alias("cust_nation"),
-            "n_lines",
-            "supp_ccy_total",
-            (
-                F.col("supp_ccy_total") * F.col("rc_milli") / F.col("rs_milli")
-            ).alias("cust_ccy_total"),
-        )
-        .orderBy("supp_nation", "cust_nation")
-    )
+    return run_sql(spark, sf_dir, "fin_currency_triangulation")
 
 
 @register(
@@ -1316,8 +1131,8 @@ def fin_var_parametric(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT segment,
                CAST(ANY_VALUE(n) AS BIGINT) AS n_days,
                CAST(COUNT(*) AS BIGINT) AS n_tail,
-               CAST(CAST(MAX(net) AS VARCHAR) AS DOUBLE) AS var_5pct,
-               CAST(CAST(SUM(net) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(MAX(net) AS STRING) AS DOUBLE) AS var_5pct,
+               CAST(CAST(SUM(net) AS STRING) AS DOUBLE)
                  / CAST(COUNT(*) AS DOUBLE) AS es_5pct
         FROM tail
         GROUP BY segment
@@ -1332,37 +1147,7 @@ def fin_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     one exact division at the edge — so ES is engine-exact, unlike an
     interpolated percentile. Same one (segment, day) shuffle +
     calendar-bounded segment windows as the VaR query."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    signed = F.col("o_totalprice").cast(DEC) * F.when(
-        F.col("o_orderstatus") == "F", 1
-    ).otherwise(-1)
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(F.sum(signed).alias("net"))
-    )
-    w = Window.partitionBy("segment").orderBy("net", "d")
-    ranked = daily.select(
-        "segment",
-        "net",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("segment")).alias("n"),
-    )
-    tail = ranked.filter(
-        F.col("rn") <= F.ceil(F.lit(0.05) * F.col("n")).cast("long")
-    )
-    return tail.groupBy("segment").agg(
-        F.first("n").cast("bigint").alias("n_days"),
-        F.count(F.lit(1)).cast("bigint").alias("n_tail"),
-        F.max("net").cast("double").alias("var_5pct"),
-        (F.sum("net").cast("double") / F.count(F.lit(1)).cast("double")).alias(
-            "es_5pct"
-        ),
-    )
+    return run_sql(spark, sf_dir, "fin_expected_shortfall")
 
 
 # ---------------------------------------------------------------------------
@@ -1517,13 +1302,13 @@ def fin_amortization_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM rev GROUP BY nation
         )
         SELECT nation, n_suppliers,
-               CAST(CAST(tot AS VARCHAR) AS DOUBLE) AS total_revenue,
-               CAST(CAST(sq AS VARCHAR) AS DOUBLE)
-                 / (CAST(CAST(tot AS VARCHAR) AS DOUBLE)
-                    * CAST(CAST(tot AS VARCHAR) AS DOUBLE)) AS hhi,
-               1.0 / (CAST(CAST(sq AS VARCHAR) AS DOUBLE)
-                 / (CAST(CAST(tot AS VARCHAR) AS DOUBLE)
-                    * CAST(CAST(tot AS VARCHAR) AS DOUBLE))) AS effective_n
+               CAST(CAST(tot AS STRING) AS DOUBLE) AS total_revenue,
+               CAST(CAST(sq AS STRING) AS DOUBLE)
+                 / (CAST(CAST(tot AS STRING) AS DOUBLE)
+                    * CAST(CAST(tot AS STRING) AS DOUBLE)) AS hhi,
+               1.0 / (CAST(CAST(sq AS STRING) AS DOUBLE)
+                 / (CAST(CAST(tot AS STRING) AS DOUBLE)
+                    * CAST(CAST(tot AS STRING) AS DOUBLE))) AS effective_n
         FROM agg
         ORDER BY nation
     """,
@@ -1538,31 +1323,7 @@ def fin_herfindahl_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     market behaves like N equal suppliers" — the supply-concentration
     risk number. Corpus-scale work is one suppkey-keyed agg;
     everything after is O(nations x suppliers-per-nation)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", F.col("s_nationkey").alias("nation")
-    )
-    rev = (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy("nation", "l_suppkey")
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).alias("r")
-        )
-    )
-    agg = rev.groupBy("nation").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_suppliers"),
-        F.sum("r").alias("tot"),
-        F.sum(F.col("r") * F.col("r")).alias("sq"),
-    )
-    tot = F.col("tot").cast("double")
-    hhi = F.col("sq").cast("double") / (tot * tot)
-    return agg.select(
-        "nation",
-        "n_suppliers",
-        tot.alias("total_revenue"),
-        hhi.alias("hhi"),
-        (F.lit(1.0) / hhi).alias("effective_n"),
-    ).orderBy("nation")
+    return run_sql(spark, sf_dir, "fin_herfindahl_concentration")
 
 
 _BS_D1 = (
@@ -1699,13 +1460,13 @@ def fin_black_scholes_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(r_q9) AS BIGINT) AS sr,
                    CAST(CAST(SUM(CAST(r_q9 AS DECIMAL(19,0)) * r_q9)
-                        AS VARCHAR) AS DOUBLE) AS srr,
+                        AS STRING) AS DOUBLE) AS srr,
                    CAST(SUM(CASE WHEN r_q9 < 0 THEN r_q9 ELSE 0 END)
                         AS BIGINT) AS sd_,
                    CAST(CAST(SUM(CASE WHEN r_q9 < 0
                                  THEN CAST(r_q9 AS DECIMAL(19,0)) * r_q9
                                  ELSE CAST(0 AS DECIMAL(19,0)) END)
-                        AS VARCHAR) AS DOUBLE) AS sdd
+                        AS STRING) AS DOUBLE) AS sdd
             FROM ret GROUP BY segment
         )
         SELECT segment, n,
@@ -1740,53 +1501,7 @@ def fin_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ratios are single double edge expressions. The lag window
     partitions by segment over calendar-bounded day counts; corpus
     work is one map-side-combining agg + one AQE-sized customer join."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d")
-    ret = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            ret_q9(F.col("x"), F.col("xp")).alias("r_q9"),
-        )
-    )
-    s = ret.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("r_q9").cast("bigint").alias("sr"),
-        as_d(
-            F.sum(F.col("r_q9").cast("decimal(19,0)") * F.col("r_q9")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("srr"),
-        F.sum(F.when(F.col("r_q9") < 0, F.col("r_q9")).otherwise(0))
-        .cast("bigint")
-        .alias("sd_"),
-        as_d(
-            F.sum(
-                F.when(
-                    F.col("r_q9") < 0,
-                    F.col("r_q9").cast("decimal(19,0)") * F.col("r_q9"),
-                ).otherwise(F.lit(0).cast("decimal(19,0)"))
-            ).cast("decimal(38,0)")
-        ).alias("sdd"),
-    )
-    nd_ = F.col("n").cast("double")
-    mean = F.col("sr").cast("double") / nd_
-    var = F.col("srr") / nd_ - mean * mean
-    dvol = F.sqrt(F.col("sdd") / nd_)
-    return s.select(
-        "segment",
-        "n",
-        (mean / F.lit(1e9)).alias("mean_ret"),
-        (F.sqrt(var) / F.lit(1e9)).alias("vol"),
-        (dvol / F.lit(1e9)).alias("downside_vol"),
-        F.when(var > 0, mean / F.sqrt(var) * F.sqrt(F.lit(252.0))).alias(
-            "sharpe_ann"
-        ),
-        F.when(
-            F.col("sdd") > 0, mean / dvol * F.sqrt(F.lit(252.0))
-        ).alias("sortino_ann"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_sharpe_sortino")
 
 
 @register(
@@ -1889,7 +1604,7 @@ def fin_bond_duration_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         tot AS (SELECT CAST(SUM(ead_cents) AS BIGINT) AS ead_all FROM agg)
         SELECT stage, n_receivables,
                CAST(ead_cents AS DOUBLE) / 100 AS ead,
-               CAST(CAST(ecl_num AS VARCHAR) AS DOUBLE) / 1e8 AS ecl,
+               CAST(CAST(ecl_num AS STRING) AS DOUBLE) / 1e8 AS ecl,
                CAST(ead_cents AS DOUBLE) / CAST(ead_all AS DOUBLE)
                    AS ead_share
         FROM agg CROSS JOIN tot
@@ -1905,47 +1620,7 @@ def fin_ecl_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums accumulate in DECIMAL(38,0) (overflow-safe at 100-TB EAD).
     Presentation divides once at the edge. One corpus scan, one
     3-group agg — nothing else."""
-    o = load_table(spark, sf_dir, "orders")
-    open_ar = o.filter(F.col("o_orderstatus") == "O").select(
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("ead_cents"),
-        F.datediff(F.lit("1998-08-02").cast("date"), F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("dpd"),
-    )
-    staged = open_ar.select(
-        F.when(F.col("dpd") <= 180, 1)
-        .when(F.col("dpd") <= 540, 2)
-        .otherwise(3)
-        .alias("stage"),
-        "ead_cents",
-        F.when(F.col("dpd") <= 180, 200)
-        .when(F.col("dpd") <= 540, 1500)
-        .otherwise(10000)
-        .alias("pd_bp"),
-    )
-    agg = staged.groupBy("stage").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_receivables"),
-        F.sum("ead_cents").cast("bigint").alias("ead_cents"),
-        F.sum(F.col("ead_cents").cast("decimal(29,0)") * F.col("pd_bp") * 45)
-        .cast("decimal(38,0)")
-        .alias("ecl_num"),
-    )
-    tot = agg.agg(F.sum("ead_cents").cast("bigint").alias("ead_all"))
-    return (
-        agg.crossJoin(F.broadcast(tot))
-        .select(
-            "stage",
-            "n_receivables",
-            (F.col("ead_cents").cast("double") / 100).alias("ead"),
-            (F.col("ecl_num").cast("string").cast("double") / F.lit(1e8)).alias("ecl"),
-            (F.col("ead_cents").cast("double") / F.col("ead_all").cast("double")).alias(
-                "ead_share"
-            ),
-        )
-        .orderBy("stage")
-    )
+    return run_sql(spark, sf_dir, "fin_ecl_staging")
 
 
 @register(
@@ -2085,41 +1760,7 @@ def fin_velocity_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     peak occurs (deterministic min-day tiebreak). All exact integer
     arithmetic; the date arithmetic is epoch-day based so both
     engines agree byte-for-byte."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("cust"),
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
-        .cast("bigint")
-        .alias("day"),
-    )
-    w = Window.partitionBy("cust").orderBy("day").rangeBetween(-29, 0)
-    vel = o.select(
-        "cust", "day", F.count(F.lit(1)).over(w).cast("bigint").alias("v30")
-    )
-    per = vel.groupBy("cust").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.max("v30").cast("bigint").alias("max_velocity"),
-    )
-    peak = (
-        vel.join(
-            per.select(F.col("cust").alias("cust_p"), "max_velocity"),
-            (F.col("cust") == F.col("cust_p")) & (F.col("v30") == F.col("max_velocity")),
-        )
-        .groupBy("cust")
-        .agg(F.min("day").cast("bigint").alias("first_peak_day"))
-    )
-    return (
-        per.join(peak, "cust")
-        .filter(F.col("max_velocity") >= 3)
-        .select(
-            F.col("cust").alias("custkey"),
-            "n_orders",
-            "max_velocity",
-            F.date_add(
-                F.lit("1970-01-01").cast("date"), F.col("first_peak_day").cast("int")
-            ).alias("first_peak_date"),
-        )
-        .orderBy(F.col("max_velocity").desc(), "custkey")
-    )
+    return run_sql(spark, sf_dir, "fin_velocity_flags")
 
 
 @register(
@@ -2173,51 +1814,7 @@ def fin_vwap_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison are shared double expressions over exact integers. Two
     map-side-combining aggregations; the benchmark join broadcasts
     the 25-row top relation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    fills = li.select(
-        F.col("l_partkey").alias("part"),
-        (F.col("l_extendedprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("notional_cents"),
-        F.col("l_quantity").cast("bigint").alias("qty"),
-    )
-    vwap = fills.groupBy("part").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_fills"),
-        F.sum("qty").cast("bigint").alias("total_qty"),
-        F.sum("notional_cents").cast("bigint").alias("total_notional"),
-        (
-            F.sum("notional_cents").cast("double") / F.sum("qty").cast("double")
-        ).alias("vwap_cents"),
-    )
-    top = vwap.orderBy(F.col("total_notional").desc(), "part").limit(25)
-    tj = top.select(
-        F.col("part").alias("tpart"), "n_fills", "total_qty", "vwap_cents"
-    )
-    shortfall = (
-        fills.join(F.broadcast(tj), F.col("part") == F.col("tpart"))
-        .groupBy("part", "n_fills", "total_qty", "vwap_cents")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("notional_cents").cast("double") / F.col("qty")
-                    > F.col("vwap_cents"),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_above_vwap")
-        )
-    )
-    return shortfall.select(
-        "part",
-        "n_fills",
-        "total_qty",
-        (F.col("vwap_cents") / F.lit(100.0)).alias("vwap"),
-        "n_above_vwap",
-        (
-            F.col("n_above_vwap").cast("double") / F.col("n_fills").cast("double")
-        ).alias("frac_above_vwap"),
-    ).orderBy("part")
+    return run_sql(spark, sf_dir, "fin_vwap_benchmark")
 
 
 @register(
@@ -2400,53 +1997,7 @@ def fin_netting_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair reduction is canonical least/greatest keying with a
     signed sum — gross and net stay exact BIGINTs, the benefit is one
     double division. 300 output rows at any SF."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    flows = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.col("s_nationkey").alias("dr"), F.col("c_nationkey").alias("cr")
-        )
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(12,2)") * 100).cast(
-                    "bigint"
-                )
-            )
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    pairs = flows.groupBy(
-        F.least("dr", "cr").alias("a"), F.greatest("dr", "cr").alias("b")
-    ).agg(
-        F.sum("cents").cast("bigint").alias("gross_cents"),
-        F.sum(
-            F.when(F.col("dr") < F.col("cr"), F.col("cents")).otherwise(
-                -F.col("cents")
-            )
-        )
-        .cast("bigint")
-        .alias("signed_cents"),
-    )
-    return pairs.select(
-        "a",
-        "b",
-        "gross_cents",
-        F.abs(F.col("signed_cents")).cast("bigint").alias("net_cents"),
-        (
-            F.lit(1.0)
-            - F.abs(F.col("signed_cents")).cast("double")
-            / F.col("gross_cents").cast("double")
-        ).alias("netting_benefit"),
-    ).orderBy("a", "b")
+    return run_sql(spark, sf_dir, "fin_netting_sets")
 
 
 @register(
@@ -2572,51 +2123,7 @@ def fin_zero_curve_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one pow each, and every output floor-quantizes at q8 (pow is
     libm — the quantize discipline). This is the curve-construction
     step upstream of every pricing op in the fin family."""
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey")
-    one = F.lit(1.0)
-    p1 = F.lit(0.01) + (F.col("n_nationkey") % 10).cast("double") * F.lit(0.004)
-    c = n.select(
-        "n_nationkey",
-        p1.alias("p1"),
-        (p1 + F.lit(0.0020)).alias("p2"),
-        (p1 + F.lit(0.0035)).alias("p3"),
-        (p1 + F.lit(0.0045)).alias("p4"),
-        (p1 + F.lit(0.0050)).alias("p5"),
-    )
-    c = c.withColumn("d1", one / (one + F.col("p1")))
-    c = c.withColumn(
-        "d2", (one - F.col("p2") * F.col("d1")) / (one + F.col("p2"))
-    )
-    c = c.withColumn(
-        "d3",
-        (one - F.col("p3") * (F.col("d1") + F.col("d2"))) / (one + F.col("p3")),
-    )
-    c = c.withColumn(
-        "d4",
-        (one - F.col("p4") * (F.col("d1") + F.col("d2") + F.col("d3")))
-        / (one + F.col("p4")),
-    )
-    c = c.withColumn(
-        "d5",
-        (
-            one
-            - F.col("p5")
-            * (F.col("d1") + F.col("d2") + F.col("d3") + F.col("d4"))
-        )
-        / (one + F.col("p5")),
-    )
-    q8 = lambda col: F.floor(col * F.lit(1e8)).cast("bigint")  # noqa: E731
-    z = lambda d, t: F.pow(F.col(d), F.lit(-1.0) / t) - one  # noqa: E731
-    return c.select(
-        "n_nationkey",
-        q8(F.col("d1")).alias("d1_q8"),
-        q8(F.col("d5")).alias("d5_q8"),
-        q8(z("d1", 1)).alias("z1_q8"),
-        q8(z("d2", 2)).alias("z2_q8"),
-        q8(z("d3", 3)).alias("z3_q8"),
-        q8(z("d4", 4)).alias("z4_q8"),
-        q8(z("d5", 5)).alias("z5_q8"),
-    ).orderBy("n_nationkey")
+    return run_sql(spark, sf_dir, "fin_zero_curve_bootstrap")
 
 
 @register(
@@ -2671,40 +2178,7 @@ def fin_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     date and peak, the fields a risk report needs. Corpus work is one
     broadcast-join daily agg; windows partition per segment over
     calendar-bounded rows."""
-    daily = seg_pnl_daily(spark, sf_dir)
-    weq = (
-        Window.partitionBy("segment")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    eq = daily.select(
-        "segment",
-        "d",
-        F.sum("pnl_cents").over(weq).cast("bigint").alias("equity"),
-        F.row_number().over(Window.partitionBy("segment").orderBy("d")).alias("rn"),
-    )
-    wmax = (
-        Window.partitionBy("segment")
-        .orderBy("rn")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    dd = eq.withColumn("peak", F.max("equity").over(wmax).cast("bigint"))
-    scored = dd.withColumn("drawdown", F.col("peak") - F.col("equity"))
-    wpick = Window.partitionBy("segment").orderBy(
-        F.col("drawdown").desc(), F.col("d")
-    )
-    best = scored.withColumn("pk", F.row_number().over(wpick)).filter(
-        F.col("pk") == 1
-    )
-    return best.select(
-        "segment",
-        F.col("drawdown").cast("bigint").alias("max_drawdown_cents"),
-        F.col("d").alias("trough_date"),
-        F.col("peak").cast("bigint").alias("peak_equity_cents"),
-        (F.col("drawdown").cast("double") / F.col("peak").cast("double")).alias(
-            "drawdown_frac"
-        ),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_max_drawdown")
 
 
 # ---------------------------------------------------------------------------
@@ -2756,21 +2230,7 @@ def fin_capm_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     series and all windows live on O(days) calendar-bounded rows (the
     unpartitioned market lag window is a ~730-row relation, never the
     corpus)."""
-    daily = seg_daily(spark, sf_dir)
-    s = market_model_sums(daily)
-    n_d = F.col("n").cast("double")
-    sr_d = F.col("sr").cast("double")
-    sm_d = F.col("sm").cast("double")
-    var_m = n_d * F.col("smm") - sm_d * sm_d
-    beta = (n_d * F.col("srm") - sr_d * sm_d) / var_m
-    return s.select(
-        "segment",
-        "n",
-        F.when(var_m > 0, beta).alias("beta"),
-        F.when(
-            var_m > 0, (sr_d - beta * sm_d) / n_d / F.lit(1e9)
-        ).alias("alpha_daily"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_capm_beta")
 
 
 @register(
@@ -2874,10 +2334,10 @@ def fin_daycount_conventions(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(win) AS BIGINT) AS wins,
                    CAST(CAST(SUM(CASE WHEN win = 1 THEN v
                                       ELSE CAST(0 AS DECIMAL(18,2)) END)
-                        AS VARCHAR) AS DOUBLE) AS wv,
+                        AS STRING) AS DOUBLE) AS wv,
                    CAST(CAST(SUM(CASE WHEN win = 0 THEN v
                                       ELSE CAST(0 AS DECIMAL(18,2)) END)
-                        AS VARCHAR) AS DOUBLE) AS lv
+                        AS STRING) AS DOUBLE) AS lv
             FROM bets GROUP BY priority
         )
         SELECT priority, n, wins,
@@ -2905,48 +2365,7 @@ def fin_kelly_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression. Class-5 edges: all-win (no losses => b undefined),
     all-loss (p=0), and zero win value all NULL f* via the same CASE
     on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    dec = "decimal(18,2)"
-    bets = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("o_orderpriority").alias("priority"),
-        F.when(F.col("l_returnflag") != "R", 1).otherwise(0).alias("win"),
-        F.col("l_extendedprice").cast(dec).alias("v"),
-    )
-    s = bets.groupBy("priority").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("win").cast("bigint").alias("wins"),
-        as_d(
-            F.sum(
-                F.when(F.col("win") == 1, F.col("v")).otherwise(
-                    F.lit(0).cast(dec)
-                )
-            )
-        ).alias("wv"),
-        as_d(
-            F.sum(
-                F.when(F.col("win") == 0, F.col("v")).otherwise(
-                    F.lit(0).cast(dec)
-                )
-            )
-        ).alias("lv"),
-    )
-    n_d = F.col("n").cast("double")
-    w_d = F.col("wins").cast("double")
-    l_d = (F.col("n") - F.col("wins")).cast("double")
-    p = w_d / n_d
-    b = (F.col("wv") / w_d) / (F.col("lv") / l_d)
-    has_both = (F.col("wins") > 0) & (F.col("wins") < F.col("n"))
-    return s.select(
-        "priority",
-        "n",
-        "wins",
-        p.alias("p_win"),
-        F.when(has_both & (F.col("lv") / l_d > 0), b).alias("odds_b"),
-        F.when(has_both & (F.col("wv") > 0), p - (1 - p) / b).alias("kelly_f"),
-    ).orderBy("priority")
+    return run_sql(spark, sf_dir, "fin_kelly_fraction")
 
 
 @register(
@@ -2961,15 +2380,15 @@ def fin_kelly_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         q AS (
             SELECT segment,
-                   CAST(FLOOR(ABS(CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                                  / CAST(CAST(xp AS VARCHAR) AS DOUBLE)
+                   CAST(FLOOR(ABS(CAST(CAST(x AS STRING) AS DOUBLE)
+                                  / CAST(CAST(xp AS STRING) AS DOUBLE)
                                   - CAST(1 AS DOUBLE))
-                              / CAST(CAST(x AS VARCHAR) AS DOUBLE)
+                              / CAST(CAST(x AS STRING) AS DOUBLE)
                               * CAST(1e18 AS DOUBLE)) AS BIGINT) AS iq
             FROM r WHERE xp IS NOT NULL
         )
         SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_days,
-               CAST(CAST(SUM(CAST(iq AS DECIMAL(38,0))) AS VARCHAR)
+               CAST(CAST(SUM(CAST(iq AS DECIMAL(38,0))) AS STRING)
                     AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) / 1e18
                    AS amihud_illiq
         FROM q GROUP BY segment ORDER BY segment
@@ -2988,34 +2407,7 @@ def fin_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the volume denominator is a sum of strictly positive order totals
     and the lag filter removes the missing-previous-day edge, so no
     division can degenerate — documented rather than guarded."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d")
-    q = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            F.floor(
-                F.abs(as_d(F.col("x")) / as_d(F.col("xp")) - F.lit(1.0))
-                / as_d(F.col("x"))
-                * F.lit(1e18)
-            )
-            .cast("bigint")
-            .alias("iq"),
-        )
-    )
-    return (
-        q.groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_days"),
-            (
-                as_d(F.sum(F.col("iq").cast("decimal(38,0)")))
-                / F.count(F.lit(1)).cast("double")
-                / F.lit(1e18)
-            ).alias("amihud_illiq"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "fin_amihud_illiquidity")
 
 
 @register(
@@ -3067,44 +2459,7 @@ def fin_calmar_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression (a never-drawn-down segment NULLs via the same CASE on
     both engines). Corpus work: one broadcast-join daily agg; windows
     per segment over calendar-bounded rows."""
-    daily = seg_pnl_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    eq = daily.select(
-        "segment", "d", F.sum("pnl_cents").over(w).cast("bigint").alias("equity")
-    )
-    dd = eq.select(
-        "segment",
-        "equity",
-        F.max("equity").over(w).cast("bigint").alias("peak"),
-    )
-    s = dd.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.max(F.col("peak") - F.col("equity")).cast("bigint").alias("max_dd_cents"),
-    )
-    tot = daily.groupBy("segment").agg(
-        F.sum("pnl_cents").cast("bigint").alias("total_cents")
-    )
-    ann = (
-        F.col("total_cents").cast("double")
-        * 252
-        / F.col("n_days").cast("double")
-    )
-    return (
-        s.join(tot, "segment")
-        .select(
-            "segment",
-            "n_days",
-            "max_dd_cents",
-            (ann / 100).alias("ann_pnl"),
-            F.when(
-                F.col("max_dd_cents") > 0,
-                ann / F.col("max_dd_cents").cast("double"),
-            ).alias("calmar"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "fin_calmar_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -3118,14 +2473,14 @@ def fin_calmar_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH cf AS (
             SELECT o_orderpriority AS priority,
                    CAST(EXTRACT(year FROM o_orderdate) - 1995 AS BIGINT) AS t,
-                   CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR)
+                   CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS STRING)
                         AS DOUBLE) AS cf
             FROM orders
         )
         SELECT priority, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.970873786407767' AS DOUBLE) WHEN t = 2 THEN CAST('0.9425959091337544' AS DOUBLE) WHEN t = 3 THEN CAST('0.9151416593531595' AS DOUBLE) WHEN t = 4 THEN CAST('0.8884870479156888' AS DOUBLE) WHEN t = 5 THEN CAST('0.8626087843841639' AS DOUBLE) WHEN t = 6 THEN CAST('0.8374842566836542' AS DOUBLE) WHEN t = 7 THEN CAST('0.8130915113433536' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 100 AS npv_3pct,
-               CAST(CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.9523809523809523' AS DOUBLE) WHEN t = 2 THEN CAST('0.9070294784580498' AS DOUBLE) WHEN t = 3 THEN CAST('0.863837598531476' AS DOUBLE) WHEN t = 4 THEN CAST('0.8227024747918819' AS DOUBLE) WHEN t = 5 THEN CAST('0.7835261664684589' AS DOUBLE) WHEN t = 6 THEN CAST('0.7462153966366275' AS DOUBLE) WHEN t = 7 THEN CAST('0.7106813301301214' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 100 AS npv_5pct,
-               CAST(CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.9259259259259258' AS DOUBLE) WHEN t = 2 THEN CAST('0.8573388203017831' AS DOUBLE) WHEN t = 3 THEN CAST('0.7938322410201696' AS DOUBLE) WHEN t = 4 THEN CAST('0.7350298527964533' AS DOUBLE) WHEN t = 5 THEN CAST('0.6805831970337529' AS DOUBLE) WHEN t = 6 THEN CAST('0.6301696268831045' AS DOUBLE) WHEN t = 7 THEN CAST('0.5834903952621338' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 100 AS npv_8pct
+               CAST(CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.970873786407767' AS DOUBLE) WHEN t = 2 THEN CAST('0.9425959091337544' AS DOUBLE) WHEN t = 3 THEN CAST('0.9151416593531595' AS DOUBLE) WHEN t = 4 THEN CAST('0.8884870479156888' AS DOUBLE) WHEN t = 5 THEN CAST('0.8626087843841639' AS DOUBLE) WHEN t = 6 THEN CAST('0.8374842566836542' AS DOUBLE) WHEN t = 7 THEN CAST('0.8130915113433536' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS STRING) AS DOUBLE) / 100 AS npv_3pct,
+               CAST(CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.9523809523809523' AS DOUBLE) WHEN t = 2 THEN CAST('0.9070294784580498' AS DOUBLE) WHEN t = 3 THEN CAST('0.863837598531476' AS DOUBLE) WHEN t = 4 THEN CAST('0.8227024747918819' AS DOUBLE) WHEN t = 5 THEN CAST('0.7835261664684589' AS DOUBLE) WHEN t = 6 THEN CAST('0.7462153966366275' AS DOUBLE) WHEN t = 7 THEN CAST('0.7106813301301214' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS STRING) AS DOUBLE) / 100 AS npv_5pct,
+               CAST(CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.9259259259259258' AS DOUBLE) WHEN t = 2 THEN CAST('0.8573388203017831' AS DOUBLE) WHEN t = 3 THEN CAST('0.7938322410201696' AS DOUBLE) WHEN t = 4 THEN CAST('0.7350298527964533' AS DOUBLE) WHEN t = 5 THEN CAST('0.6805831970337529' AS DOUBLE) WHEN t = 6 THEN CAST('0.6301696268831045' AS DOUBLE) WHEN t = 7 THEN CAST('0.5834903952621338' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS STRING) AS DOUBLE) / 100 AS npv_8pct
         FROM cf GROUP BY priority ORDER BY priority
     """,
 )
@@ -3141,29 +2496,7 @@ def fin_npv_rate_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-quantized to exact cents before summation — no libm pow at
     query time, no float accumulation (class-1), no division by data
     (class-5). One scan, one hash agg per priority."""
-    o = load_table(spark, sf_dir, "orders")
-    cf = o.select(
-        F.col("o_orderpriority").alias("priority"),
-        (F.year("o_orderdate") - 1995).cast("bigint").alias("t"),
-        F.col("o_totalprice")
-        .cast("decimal(12,2)")
-        .cast("string")
-        .cast("double")
-        .alias("cf"),
-    )
-    agg = cf.groupBy("priority").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.expr("CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.970873786407767' AS DOUBLE) WHEN t = 2 THEN CAST('0.9425959091337544' AS DOUBLE) WHEN t = 3 THEN CAST('0.9151416593531595' AS DOUBLE) WHEN t = 4 THEN CAST('0.8884870479156888' AS DOUBLE) WHEN t = 5 THEN CAST('0.8626087843841639' AS DOUBLE) WHEN t = 6 THEN CAST('0.8374842566836542' AS DOUBLE) WHEN t = 7 THEN CAST('0.8130915113433536' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS STRING)").cast("double").alias("raw_npv_3pct"),
-        F.expr("CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.9523809523809523' AS DOUBLE) WHEN t = 2 THEN CAST('0.9070294784580498' AS DOUBLE) WHEN t = 3 THEN CAST('0.863837598531476' AS DOUBLE) WHEN t = 4 THEN CAST('0.8227024747918819' AS DOUBLE) WHEN t = 5 THEN CAST('0.7835261664684589' AS DOUBLE) WHEN t = 6 THEN CAST('0.7462153966366275' AS DOUBLE) WHEN t = 7 THEN CAST('0.7106813301301214' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS STRING)").cast("double").alias("raw_npv_5pct"),
-        F.expr("CAST(SUM(CAST(FLOOR(cf * (CASE WHEN t = 0 THEN CAST('1.0' AS DOUBLE) WHEN t = 1 THEN CAST('0.9259259259259258' AS DOUBLE) WHEN t = 2 THEN CAST('0.8573388203017831' AS DOUBLE) WHEN t = 3 THEN CAST('0.7938322410201696' AS DOUBLE) WHEN t = 4 THEN CAST('0.7350298527964533' AS DOUBLE) WHEN t = 5 THEN CAST('0.6805831970337529' AS DOUBLE) WHEN t = 6 THEN CAST('0.6301696268831045' AS DOUBLE) WHEN t = 7 THEN CAST('0.5834903952621338' AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 100) AS DECIMAL(38,0))) AS STRING)").cast("double").alias("raw_npv_8pct"),
-    )
-    return agg.select(
-        "priority",
-        "n",
-        (F.col("raw_npv_3pct") / 100).alias("npv_3pct"),
-        (F.col("raw_npv_5pct") / 100).alias("npv_5pct"),
-        (F.col("raw_npv_8pct") / 100).alias("npv_8pct"),
-    ).orderBy("priority")
+    return run_sql(spark, sf_dir, "fin_npv_rate_grid")
 
 
 @register(
@@ -3183,7 +2516,7 @@ def fin_npv_rate_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_days,
                sqrt(CAST(CAST(SUM(CAST(ddq AS DECIMAL(19,0)) * ddq)
-                          AS VARCHAR) AS DOUBLE)
+                          AS STRING) AS DOUBLE)
                     / CAST(COUNT(*) AS DOUBLE)) / 1e6 AS ulcer_index,
                CAST(MAX(ddq) AS DOUBLE) / 1e6 AS max_dd_pct
         FROM dd GROUP BY segment ORDER BY segment
@@ -3203,33 +2536,7 @@ def fin_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly positive revenue, so the divisor cannot degenerate —
     documented, not guarded. Windows partition per segment over
     calendar-bounded rows; corpus work is the one daily agg."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    dd = daily.select(
-        "segment",
-        dd_q6(F.max("x").over(w), F.col("x"))
-        .alias("ddq"),
-    )
-    return (
-        dd.groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_days"),
-            (
-                F.sqrt(
-                    F.sum(F.col("ddq").cast("decimal(19,0)") * F.col("ddq"))
-                    .cast("decimal(38,0)")
-                    .cast("string")
-                    .cast("double")
-                    / F.count(F.lit(1)).cast("double")
-                )
-                / F.lit(1e6)
-            ).alias("ulcer_index"),
-            (F.max("ddq").cast("double") / F.lit(1e6)).alias("max_dd_pct"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "fin_ulcer_index")
 
 
 @register(
@@ -3246,7 +2553,7 @@ def fin_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         s AS (
             SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(a) AS BIGINT) AS sa,
-                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0)) * a) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0)) * a) AS STRING)
                         AS DOUBLE) AS saa
             FROM act GROUP BY segment
         )
@@ -3280,33 +2587,7 @@ def fin_tracking_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a segment that IS the market — NULLs both on both engines).
     Scale: same one-daily-agg + calendar-bounded-window shape as
     fin_sharpe_sortino."""
-    daily = seg_daily(spark, sf_dir)
-    rs = seg_returns(daily)
-    rm = mkt_returns(daily)
-    act = rs.join(F.broadcast(rm), "d").select(
-        "segment", (F.col("r") - F.col("m")).alias("a")
-    )
-    s = act.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("a").cast("bigint").alias("sa"),
-        as_d(F.sum(F.col("a").cast("decimal(19,0)") * F.col("a"))).alias("saa"),
-    )
-    n_d = F.col("n").cast("double")
-    sa_d = F.col("sa").cast("double")
-    ss = F.col("saa") - sa_d * sa_d / n_d
-    sd = F.sqrt(ss / (n_d - 1))
-    ok = (F.col("n") > 1) & (ss > 0)
-    return s.select(
-        "segment",
-        "n",
-        (sa_d / n_d / F.lit(1e9)).alias("mean_active_ret"),
-        F.when(ok, sd / F.lit(1e9) * F.sqrt(F.lit(252.0))).alias(
-            "tracking_error_ann"
-        ),
-        F.when(ok, (sa_d / n_d) / (sd / F.sqrt(F.lit(252.0)))).alias(
-            "information_ratio_ann"
-        ),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_tracking_error")
 
 
 @register(
@@ -3351,41 +2632,7 @@ def fin_omega_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Omega is a single guarded double division (a segment with no down
     days NULLs on both engines — class 5). Same one-daily-agg +
     per-segment-window shape as the rest of the return family."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d")
-    ret = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            ret_q9(F.col("x"), F.col("xp")).alias("r"),
-        )
-    )
-    s = ret.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("r") > 0, F.col("r")).otherwise(0))
-        .cast("bigint")
-        .alias("gains"),
-        F.sum(F.when(F.col("r") < 0, -F.col("r")).otherwise(0))
-        .cast("bigint")
-        .alias("losses"),
-        F.sum(F.when(F.col("r") > 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_up"),
-    )
-    return s.select(
-        "segment",
-        "n",
-        (F.col("gains").cast("double") / F.lit(1e9)).alias("gain_sum"),
-        (F.col("losses").cast("double") / F.lit(1e9)).alias("loss_sum"),
-        (F.col("n_up").cast("double") / F.col("n").cast("double")).alias(
-            "win_rate"
-        ),
-        F.when(
-            F.col("losses") > 0,
-            F.col("gains").cast("double") / F.col("losses").cast("double"),
-        ).alias("omega"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_omega_ratio")
 
 
 @register(
@@ -3966,94 +3213,7 @@ def fin_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative state), with the deterministic longest-spell tiebreak on
     earliest start. All windows per-segment over calendar-bounded
     rows; every output is an exact integer."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("o_orderstatus") == "F", 1)
-                .otherwise(-1)
-                * (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast(
-                    "bigint"
-                )
-            )
-            .cast("bigint")
-            .alias("pnl_cents")
-        )
-    )
-    w_eq = Window.partitionBy("segment").orderBy("d").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_rn = Window.partitionBy("segment").orderBy("d")
-    eq = daily.select(
-        "segment",
-        "d",
-        F.sum("pnl_cents").over(w_eq).cast("bigint").alias("equity"),
-        F.row_number().over(w_rn).alias("rn"),
-    )
-    w_pk = Window.partitionBy("segment").orderBy("rn").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    dd = eq.select(
-        "segment",
-        "rn",
-        (F.col("equity") < F.max("equity").over(w_pk).cast("bigint"))
-        .cast("int")
-        .alias("under"),
-    )
-    w_cum = Window.partitionBy("segment").orderBy("rn").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    islands = dd.select(
-        "segment",
-        "rn",
-        "under",
-        (F.col("rn") - F.sum("under").over(w_cum).cast("bigint")).alias(
-            "grp_key"
-        ),
-    )
-    spells = (
-        islands.filter(F.col("under") == 1)
-        .groupBy("segment", "grp_key")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("len"),
-            F.min("rn").cast("bigint").alias("start_rn"),
-        )
-    )
-    w_best = Window.partitionBy("segment").orderBy(
-        F.col("len").desc(), "start_rn"
-    )
-    best = (
-        spells.withColumn("pk", F.row_number().over(w_best))
-        .filter(F.col("pk") == 1)
-        .select(
-            "segment",
-            F.col("len").alias("longest_spell_days"),
-            F.col("start_rn").alias("longest_spell_start_rn"),
-        )
-    )
-    agg = spells.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_spells"),
-        F.sum("len").cast("bigint").alias("days_underwater"),
-    )
-    return (
-        agg.join(best, "segment")
-        .select(
-            "segment",
-            "n_spells",
-            "days_underwater",
-            "longest_spell_days",
-            "longest_spell_start_rn",
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "fin_drawdown_duration")
 
 
 # ---------------------------------------------------------------------------
@@ -4095,32 +3255,7 @@ def fin_pain_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division at the edge and the underwater count is pure
     integer. Per-segment windows over calendar-bounded rows; corpus
     work is the one daily agg."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    mx = F.max("x").over(w)
-    dd = daily.select(
-        "segment",
-        dd_q6(mx, F.col("x"))
-        .alias("ddq"),
-    )
-    n_d = F.count(F.lit(1)).cast("double")
-    return (
-        dd.groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_days"),
-            (F.sum("ddq").cast("double") / n_d / F.lit(1e6)).alias(
-                "pain_index_pct"
-            ),
-            (
-                F.sum(F.when(F.col("ddq") > 0, 1).otherwise(0)).cast("double")
-                / n_d
-            ).alias("underwater_frac"),
-            (F.max("ddq").cast("double") / F.lit(1e6)).alias("max_dd_pct"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "fin_pain_index")
 
 
 # ---------------------------------------------------------------------------
@@ -4157,21 +3292,7 @@ def fin_treynor_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta-zero guard compares the covariance numerator, which is exact
     before the one double division). Corpus work: one broadcast-join
     daily agg; everything after is calendar-bounded."""
-    daily = seg_daily(spark, sf_dir)
-    s = market_model_sums(daily)
-    n_d = F.col("n").cast("double")
-    sr_d = F.col("sr").cast("double")
-    sm_d = F.col("sm").cast("double")
-    cov_num = n_d * F.col("srm") - sr_d * sm_d
-    var_m = n_d * F.col("smm") - sm_d * sm_d
-    return s.select(
-        "segment",
-        "n",
-        F.when(
-            (var_m > 0) & (cov_num != 0),
-            (sr_d / n_d / F.lit(1e9)) / (cov_num / var_m),
-        ).alias("treynor_daily"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_treynor_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -4339,44 +3460,7 @@ def fin_capture_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer <> 0 guard). Corpus work is the shared broadcast-join
     daily agg; the conditional sums ride the calendar-bounded joined
     return relation."""
-    daily = seg_daily(spark, sf_dir)
-    rs = seg_returns(daily)
-    rm = mkt_returns(daily)
-    up = F.col("m") > 0
-    down = F.col("m") < 0
-    s = (
-        rs.join(F.broadcast(rm), "d")
-        .groupBy("segment")
-        .agg(
-            F.sum(F.when(up, 1).otherwise(0)).cast("bigint").alias("n_up"),
-            F.sum(F.when(down, 1).otherwise(0)).cast("bigint").alias("n_down"),
-            F.sum(F.when(up, F.col("r")).otherwise(0))
-            .cast("bigint")
-            .alias("sr_up"),
-            F.sum(F.when(up, F.col("m")).otherwise(0))
-            .cast("bigint")
-            .alias("sm_up"),
-            F.sum(F.when(down, F.col("r")).otherwise(0))
-            .cast("bigint")
-            .alias("sr_down"),
-            F.sum(F.when(down, F.col("m")).otherwise(0))
-            .cast("bigint")
-            .alias("sm_down"),
-        )
-    )
-    return s.select(
-        "segment",
-        "n_up",
-        "n_down",
-        F.when(
-            F.col("sm_up") != 0,
-            F.col("sr_up").cast("double") / F.col("sm_up").cast("double"),
-        ).alias("upside_capture"),
-        F.when(
-            F.col("sm_down") != 0,
-            F.col("sr_down").cast("double") / F.col("sm_down").cast("double"),
-        ).alias("downside_capture"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_capture_ratios")
 
 
 # ---------------------------------------------------------------------------
@@ -4397,9 +3481,9 @@ def fin_capture_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
         s AS (
             SELECT segment,
                    CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS s1,
-                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0)) * a) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(a AS DECIMAL(19,0)) * a) AS STRING)
                         AS DOUBLE) AS s2
             FROM act GROUP BY segment
         )
@@ -4424,27 +3508,7 @@ def fin_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     active variance NULLs identically. Corpus work is the shared daily
     agg; the join and moments ride the calendar-bounded return
     relation."""
-    daily = seg_daily(spark, sf_dir)
-    rs = seg_returns(daily)
-    rm = mkt_returns(seg_daily(spark, sf_dir))
-    act = rs.join(F.broadcast(rm), "d").select(
-        "segment", (F.col("r") - F.col("m")).alias("a")
-    )
-    s = act.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum(F.col("a").cast("decimal(19,0)"))).alias("s1"),
-        as_d(F.sum(F.col("a").cast("decimal(19,0)") * F.col("a"))).alias("s2"),
-    )
-    n_d = F.col("n").cast("double")
-    var_num = n_d * F.col("s2") - F.col("s1") * F.col("s1")
-    return s.select(
-        "segment",
-        F.col("n").alias("n_days"),
-        F.when(
-            (F.col("n") > 1) & (var_num > 0),
-            (F.col("s1") / n_d) / F.sqrt(var_num / (n_d * (n_d - 1))),
-        ).alias("ir_daily"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_information_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -4461,17 +3525,17 @@ def fin_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         segm AS (
             SELECT segment,
                    CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS s1,
-                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * r) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * r) AS STRING)
                         AS DOUBLE) AS s2
             FROM rs GROUP BY segment
         ),
         mm AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS nm,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS m1,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS STRING)
                         AS DOUBLE) AS m2s
             FROM rm
         )
@@ -4504,42 +3568,7 @@ def fin_m2_modigliani(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossings); sharpe and m2 are each ONE guarded expression whose
     sub-terms repeat VERBATIM on both engines so the float paths are
     identical. Zero segment variance NULLs both outputs identically."""
-    daily = seg_daily(spark, sf_dir)
-    rs = seg_returns(daily)
-    rm = mkt_returns(seg_daily(spark, sf_dir))
-    segm = rs.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum(F.col("r").cast("decimal(19,0)"))).alias("s1"),
-        as_d(F.sum(F.col("r").cast("decimal(19,0)") * F.col("r"))).alias("s2"),
-    )
-    mm = rm.agg(
-        F.count(F.lit(1)).cast("bigint").alias("nm"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("m1"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("m2s"),
-    )
-    n_d = F.col("n").cast("double")
-    nm_d = F.col("nm").cast("double")
-    var_num = n_d * F.col("s2") - F.col("s1") * F.col("s1")
-    sharpe = (F.col("s1") / n_d) / F.sqrt(var_num / (n_d * (n_d - 1)))
-    sd_mkt = F.sqrt(
-        (nm_d * F.col("m2s") - F.col("m1") * F.col("m1"))
-        / (nm_d * (nm_d - 1))
-    )
-    return (
-        segm.crossJoin(F.broadcast(mm))
-        .select(
-            "segment",
-            F.col("n").alias("n_days"),
-            F.when((F.col("n") > 1) & (var_num > 0), sharpe).alias(
-                "sharpe_daily"
-            ),
-            F.when(
-                (F.col("n") > 1) & (F.col("nm") > 1) & (var_num > 0),
-                sharpe * sd_mkt,
-            ).alias("m2_daily"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "fin_m2_modigliani")
 
 
 # ---------------------------------------------------------------------------
@@ -4583,10 +3612,10 @@ def fin_m2_modigliani(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT CAST(y AS BIGINT) AS year,
                CAST(SUM(present) AS BIGINT) AS n_segments,
-               CAST(CAST(SUM(num) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(SUM(num) AS STRING) AS DOUBLE)
                  / (CAST(2 AS DOUBLE)
-                    * CAST(CAST(xy AS VARCHAR) AS DOUBLE)
-                    * CAST(CAST(xyp AS VARCHAR) AS DOUBLE)) AS turnover
+                    * CAST(CAST(xy AS STRING) AS DOUBLE)
+                    * CAST(CAST(xyp AS STRING) AS DOUBLE)) AS turnover
         FROM terms GROUP BY y, xy, xyp ORDER BY year
     """,
 )
@@ -4602,60 +3631,7 @@ def fin_portfolio_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact decimal guard (cannot occur at shipped SFs; documented).
     Corpus work is the shared daily agg; the grid/lag joins ride the
     |years| x |segments| relation."""
-    daily = seg_daily(spark, sf_dir)
-    ys = daily.groupBy(F.year("d").alias("y"), "segment").agg(
-        F.sum("x").cast("decimal(18,2)").alias("xs")
-    )
-    yrs = ys.select("y").distinct()
-    sgs = ys.select("segment").distinct()
-    grid = (
-        yrs.crossJoin(F.broadcast(sgs))
-        .join(F.broadcast(ys), ["y", "segment"], "left")
-        .select(
-            "y",
-            "segment",
-            F.coalesce(F.col("xs"), F.lit(0).cast("decimal(18,2)")).alias("xs"),
-        )
-    )
-    yt = grid.groupBy("y").agg(F.sum("xs").cast("decimal(18,2)").alias("xy"))
-    gp = grid.select(
-        (F.col("y") + 1).alias("y"),
-        "segment",
-        F.col("xs").alias("xsp"),
-    )
-    ytp = yt.select((F.col("y") + 1).alias("y"), F.col("xy").alias("xyp"))
-    terms = (
-        grid.join(F.broadcast(gp), ["y", "segment"])
-        .join(F.broadcast(yt), "y")
-        .join(F.broadcast(ytp), "y")
-        .filter((F.col("xy") > 0) & (F.col("xyp") > 0))
-        .select(
-            "y",
-            "xy",
-            "xyp",
-            F.abs(
-                F.col("xs").cast("decimal(19,2)")
-                * F.col("xyp").cast("decimal(19,2)")
-                - F.col("xsp").cast("decimal(19,2)")
-                * F.col("xy").cast("decimal(19,2)")
-            ).alias("num"),
-            F.when(F.col("xs") > 0, 1).otherwise(0).alias("present"),
-        )
-    )
-    return (
-        terms.groupBy("y", "xy", "xyp")
-        .agg(
-            F.sum("present").cast("bigint").alias("n_segments"),
-            (
-                as_d(F.sum("num"))
-                / (F.lit(2.0) * as_d(F.col("xy")) * as_d(F.col("xyp")))
-            ).alias("turnover"),
-        )
-        .select(
-            F.col("y").cast("bigint").alias("year"), "n_segments", "turnover"
-        )
-        .orderBy("year")
-    )
+    return run_sql(spark, sf_dir, "fin_portfolio_turnover")
 
 
 # ---------------------------------------------------------------------------
@@ -4699,14 +3675,14 @@ def fin_portfolio_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         j AS (
             SELECT g.y, g.segment,
-                   CAST(CAST(g.xb AS VARCHAR) AS DOUBLE) AS xb,
-                   CAST(CAST(g.xp AS VARCHAR) AS DOUBLE) AS xp,
-                   CAST(CAST(gp.xb AS VARCHAR) AS DOUBLE) AS xbp,
-                   CAST(CAST(gp.xp AS VARCHAR) AS DOUBLE) AS xpp,
-                   CAST(CAST(t.tb AS VARCHAR) AS DOUBLE) AS tb,
-                   CAST(CAST(tp2.tb AS VARCHAR) AS DOUBLE) AS tbp,
-                   CAST(CAST(t.tp AS VARCHAR) AS DOUBLE) AS tpv,
-                   CAST(CAST(tp2.tp AS VARCHAR) AS DOUBLE) AS tpp
+                   CAST(CAST(g.xb AS STRING) AS DOUBLE) AS xb,
+                   CAST(CAST(g.xp AS STRING) AS DOUBLE) AS xp,
+                   CAST(CAST(gp.xb AS STRING) AS DOUBLE) AS xbp,
+                   CAST(CAST(gp.xp AS STRING) AS DOUBLE) AS xpp,
+                   CAST(CAST(t.tb AS STRING) AS DOUBLE) AS tb,
+                   CAST(CAST(tp2.tb AS STRING) AS DOUBLE) AS tbp,
+                   CAST(CAST(t.tp AS STRING) AS DOUBLE) AS tpv,
+                   CAST(CAST(tp2.tp AS STRING) AS DOUBLE) AS tpp
             FROM grid g
             JOIN grid gp ON gp.y = g.y - 1 AND gp.segment = g.segment
             JOIN tots t ON t.y = g.y
@@ -4742,86 +3718,7 @@ def fin_brinson_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     year/segment has revenue on both sides). Corpus work: two
     broadcast-dim aggs; the attribution rides the year x segment
     grid."""
-    daily = seg_daily(spark, sf_dir)
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    pdaily = (
-        o.filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.year("o_orderdate").alias("y"),
-        )
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-             .cast("decimal(18,2)").alias("xp"))
-    )
-    bys = daily.groupBy(F.year("d").alias("y"), "segment").agg(
-        F.sum("x").cast("decimal(18,2)").alias("xb")
-    )
-    yrs = bys.select("y").distinct()
-    sgs = bys.select("segment").distinct()
-    zero = F.lit(0).cast("decimal(18,2)")
-    grid = (
-        yrs.crossJoin(F.broadcast(sgs))
-        .join(F.broadcast(bys), ["y", "segment"], "left")
-        .join(F.broadcast(pdaily), ["y", "segment"], "left")
-        .select(
-            "y",
-            "segment",
-            F.coalesce(F.col("xb"), zero).alias("xb"),
-            F.coalesce(F.col("xp"), zero).alias("xp"),
-        )
-    )
-    tots = grid.groupBy("y").agg(
-        F.sum("xb").cast("decimal(18,2)").alias("tb"),
-        F.sum("xp").cast("decimal(18,2)").alias("tp"),
-    )
-    gp = grid.select(
-        (F.col("y") + 1).alias("y"),
-        "segment",
-        F.col("xb").alias("xbp_d"),
-        F.col("xp").alias("xpp_d"),
-    )
-    totp = tots.select(
-        (F.col("y") + 1).alias("y"),
-        F.col("tb").alias("tbp_d"),
-        F.col("tp").alias("tpp_d"),
-    )
-    j = (
-        grid.join(F.broadcast(gp), ["y", "segment"])
-        .join(F.broadcast(tots), "y")
-        .join(F.broadcast(totp), "y")
-        .select(
-            "y",
-            "segment",
-            as_d(F.col("xb")).alias("xb"),
-            as_d(F.col("xp")).alias("xp"),
-            as_d(F.col("xbp_d")).alias("xbp"),
-            as_d(F.col("xpp_d")).alias("xpp"),
-            as_d(F.col("tb")).alias("tb"),
-            as_d(F.col("tbp_d")).alias("tbp"),
-            as_d(F.col("tp")).alias("tpv"),
-            as_d(F.col("tpp_d")).alias("tpp"),
-        )
-    )
-    ok = (
-        (F.col("xbp") > 0)
-        & (F.col("xpp") > 0)
-        & (F.col("tbp") > 0)
-        & (F.col("tpp") > 0)
-    )
-    wp = F.col("xpp") / F.col("tpp")
-    wb = F.col("xbp") / F.col("tbp")
-    rbs = F.col("xb") / F.col("xbp") - 1
-    rps = F.col("xp") / F.col("xpp") - 1
-    rb = F.col("tb") / F.col("tbp") - 1
-    return j.select(
-        F.col("y").cast("bigint").alias("year"),
-        "segment",
-        F.when(ok, (wp - wb) * (rbs - rb)).alias("allocation"),
-        F.when(ok, wb * (rps - rbs)).alias("selection"),
-        F.when(ok, (wp - wb) * (rps - rbs)).alias("interaction"),
-    ).orderBy("year", "segment")
+    return run_sql(spark, sf_dir, "fin_brinson_attribution")
 
 
 # ---------------------------------------------------------------------------
@@ -4856,20 +3753,20 @@ def fin_brinson_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         eps AS (
             SELECT grp,
                    CAST(FLOOR(MAX(
-                       CAST(CAST(peak - xm AS VARCHAR) AS DOUBLE)
-                       / CAST(CAST(peak AS VARCHAR) AS DOUBLE))
+                       CAST(CAST(peak - xm AS STRING) AS DOUBLE)
+                       / CAST(CAST(peak AS STRING) AS DOUBLE))
                        * CAST(1e9 AS DOUBLE)) AS BIGINT) AS q
             FROM isl WHERE below = 1 GROUP BY grp
         ),
         dd AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n_episodes,
-                   CAST(CAST(SUM(CAST(q AS DECIMAL(19,0)) * q) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(q AS DECIMAL(19,0)) * q) AS STRING)
                         AS DOUBLE) AS sq2
             FROM eps
         ),
         mu AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS s1
             FROM rm
         )
@@ -4895,67 +3792,7 @@ def fin_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     only unbounded-count float sum is thereby integerized. Burke is
     ONE guarded expression. No drawdowns (sq2 = 0) NULLs identically.
     The running-peak window is calendar-bounded (O(days))."""
-    daily = seg_daily(spark, sf_dir)
-    mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
-    wd = Window.orderBy("d")  # calendar-bounded
-    pk = mkt.select(
-        "d",
-        "xm",
-        F.max("xm").over(wd.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("peak"),
-    )
-    flagged = pk.select(
-        "d",
-        "xm",
-        "peak",
-        F.when(F.col("xm") < F.col("peak"), 1).otherwise(0).alias("below"),
-        F.row_number().over(wd).alias("rn"),
-    )
-    isl = flagged.withColumn(
-        "grp",
-        F.col("rn")
-        - F.row_number().over(Window.partitionBy("below").orderBy("d")),
-    )
-    eps = (
-        isl.filter(F.col("below") == 1)
-        .groupBy("grp")
-        .agg(
-            F.floor(
-                F.max(
-                    as_d(F.col("peak") - F.col("xm")) / as_d(F.col("peak"))
-                )
-                * F.lit(1e9)
-            ).cast("bigint").alias("q")
-        )
-    )
-    dd = eps.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_episodes"),
-        as_d(F.sum(F.col("q").cast("decimal(19,0)") * F.col("q"))).alias(
-            "sq2"
-        ),
-    )
-    rm = mkt_returns(seg_daily(spark, sf_dir))
-    mu = rm.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
-    )
-    sum_dd2 = F.col("sq2") / F.expr("CAST(1e18 AS DOUBLE)")
-    return (
-        mu.crossJoin(F.broadcast(dd))
-        .select(
-            "n_days",
-            "n_episodes",
-            sum_dd2.alias("sum_dd2"),
-            F.when(
-                (F.col("sq2") > 0) & (F.col("n_days") > 0),
-                (
-                    (F.col("s1") / F.expr("CAST(1e9 AS DOUBLE)"))
-                    / F.col("n_days").cast("double")
-                )
-                / F.sqrt(sum_dd2),
-            ).alias("burke_daily"),
-        )
-    )
+    return run_sql(spark, sf_dir, "fin_burke_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -5152,8 +3989,8 @@ def fin_cornish_fisher_var(spark: SparkSession, sf_dir: str) -> DataFrame:
         eps AS (
             SELECT grp,
                    CAST(FLOOR(MAX(
-                       CAST(CAST(peak - xm AS VARCHAR) AS DOUBLE)
-                       / CAST(CAST(peak AS VARCHAR) AS DOUBLE))
+                       CAST(CAST(peak - xm AS STRING) AS DOUBLE)
+                       / CAST(CAST(peak AS STRING) AS DOUBLE))
                        * CAST(1e9 AS DOUBLE)) AS BIGINT) AS q
             FROM isl WHERE below = 1 GROUP BY grp
         ),
@@ -5164,7 +4001,7 @@ def fin_cornish_fisher_var(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         mu AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS s1
             FROM rm
         )
@@ -5189,65 +4026,7 @@ def fin_sterling_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands episode machinery, q9-integerized episode depths
     so the across-episodes average is a ratio of exact integers. Zero
     drawdown NULLs identically. Running-peak window is O(days)."""
-    daily = seg_daily(spark, sf_dir)
-    mkt = daily.groupBy("d").agg(F.sum("x").cast("decimal(18,2)").alias("xm"))
-    wd = Window.orderBy("d")  # calendar-bounded
-    pk = mkt.select(
-        "d",
-        "xm",
-        F.max("xm").over(wd.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("peak"),
-    )
-    flagged = pk.select(
-        "d",
-        "xm",
-        "peak",
-        F.when(F.col("xm") < F.col("peak"), 1).otherwise(0).alias("below"),
-        F.row_number().over(wd).alias("rn"),
-    )
-    isl = flagged.withColumn(
-        "grp",
-        F.col("rn")
-        - F.row_number().over(Window.partitionBy("below").orderBy("d")),
-    )
-    eps = (
-        isl.filter(F.col("below") == 1)
-        .groupBy("grp")
-        .agg(
-            F.floor(
-                F.max(
-                    as_d(F.col("peak") - F.col("xm")) / as_d(F.col("peak"))
-                )
-                * F.lit(1e9)
-            ).cast("bigint").alias("q")
-        )
-    )
-    dd = eps.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_episodes"),
-        F.sum("q").cast("bigint").alias("sq"),
-    )
-    rm = mkt_returns(seg_daily(spark, sf_dir))
-    mu = rm.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
-    )
-    e9 = F.expr("CAST(1e9 AS DOUBLE)")
-    avg_dd = F.col("sq").cast("double") / (
-        F.col("n_episodes").cast("double") * e9
-    )
-    return (
-        mu.crossJoin(F.broadcast(dd))
-        .select(
-            "n_days",
-            "n_episodes",
-            F.when(F.col("n_episodes") > 0, avg_dd).alias("avg_drawdown"),
-            F.when(
-                (F.col("sq") > 0) & (F.col("n_days") > 0),
-                ((F.col("s1") / e9) / F.col("n_days").cast("double"))
-                / avg_dd,
-            ).alias("sterling_daily"),
-        )
-    )
+    return run_sql(spark, sf_dir, "fin_sterling_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -5268,7 +4047,7 @@ def fin_sterling_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
                        AS up1,
                    CAST(CAST(SUM(CASE WHEN r < 0
                                  THEN CAST(r AS DECIMAL(19,0)) * r
-                                 ELSE 0 END) AS VARCHAR) AS DOUBLE) AS dn2
+                                 ELSE 0 END) AS STRING) AS DOUBLE) AS dn2
             FROM rs GROUP BY segment
         )
         SELECT segment, n AS n_days,
@@ -5297,33 +4076,7 @@ def fin_upside_potential_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; both population moments (/n, convention pinned) and the
     ratio are fixed single expressions. No negative days -> NULL
     identically. One scan on the shared return relation."""
-    daily = seg_daily(spark, sf_dir)
-    rs = seg_returns(daily)
-    s = rs.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("r") > 0, F.col("r")).otherwise(0))
-        .cast("bigint")
-        .alias("up1"),
-        as_d(
-            F.sum(
-                F.when(
-                    F.col("r") < 0,
-                    F.col("r").cast("decimal(19,0)") * F.col("r"),
-                ).otherwise(F.lit(0).cast("decimal(38,0)"))
-            )
-        ).alias("dn2"),
-    )
-    n_d = F.col("n").cast("double")
-    e9 = F.expr("CAST(1e9 AS DOUBLE)")
-    upp = F.col("up1").cast("double") / (n_d * e9)
-    ddev = F.sqrt(F.col("dn2") / n_d) / e9
-    return s.select(
-        "segment",
-        F.col("n").alias("n_days"),
-        upp.alias("upside_potential"),
-        F.when(F.col("dn2") > 0, ddev).alias("downside_deviation"),
-        F.when(F.col("dn2") > 0, upp / ddev).alias("upr"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_upside_potential_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -5700,16 +4453,7 @@ def fin_gain_to_pain(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate NULLs both engines on an all-up segment). Distributed
     shape: one broadcast-join daily agg (corpus work) + per-segment
     lag windows on calendar-bounded rows + one k-segment hash agg."""
-    rs = seg_returns(seg_daily(spark, sf_dir))
-    pain = F.sum(F.when(F.col("r") < 0, -F.col("r")).otherwise(0))
-    return rs.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("r").cast("bigint").alias("sum_r_q9"),
-        pain.cast("bigint").alias("pain_q9"),
-        F.when(
-            pain > 0, F.sum("r").cast("double") / pain.cast("double")
-        ).alias("gain_to_pain"),
-    )
+    return run_sql(spark, sf_dir, "fin_gain_to_pain")
 
 
 @register(
@@ -5748,24 +4492,7 @@ def fin_jensen_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zero market variance NULLs both engines). Distributed shape
     identical to fin_capm_beta: corpus work is the daily agg; all
     windows on calendar-bounded rows; market series broadcast."""
-    rf_d = 0.03 / 365  # 8.219178082191781e-05, literal-twinned above
-    daily = seg_daily(spark, sf_dir)
-    s = market_model_sums(daily)
-    n_d = F.col("n").cast("double")
-    sr_d = F.col("sr").cast("double")
-    sm_d = F.col("sm").cast("double")
-    var_m = n_d * F.col("smm") - sm_d * sm_d
-    beta = (n_d * F.col("srm") - sr_d * sm_d) / var_m
-    rf = F.lit(rf_d)
-    alpha = (
-        (sr_d / n_d / F.lit(1e9) - rf)
-        - beta * (sm_d / n_d / F.lit(1e9) - rf)
-    ) * F.lit(365).cast("double")
-    return s.select(
-        "segment",
-        "n",
-        F.when(var_m > 0, alpha).alias("jensen_alpha_annual"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_jensen_alpha")
 
 
 @register(

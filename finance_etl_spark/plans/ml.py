@@ -40,11 +40,10 @@ from finance_etl_spark.functions.money import (
     o_ordered_fold_sum,
     o_qsum,
     ordered_fold_sum,
-    qsum,
 )
 from finance_etl_spark.io.readers import load_table, load_table_parallel
 from finance_etl_spark.plans.recipes import ORDER_PRIORITIES, SPACE, pois_case_sql
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, run_sql
 
 _DIM = 64  # embeddings.embedding is ArrayType(float), 64-dim
 _K = 8
@@ -440,19 +439,19 @@ def ml_naive_bayes_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _OLS_SUMS_SQL = """
         SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-               CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS s1,
-               CAST(CAST(SUM(CAST(l_discount AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS s2,
+               CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS s1,
+               CAST(CAST(SUM(CAST(l_discount AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS s2,
                CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(20,2))
-                           * CAST(l_quantity AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS s11,
+                           * CAST(l_quantity AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS s11,
                CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(20,2))
-                           * CAST(l_discount AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS s12,
+                           * CAST(l_discount AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS s12,
                CAST(CAST(SUM(CAST(l_discount AS DECIMAL(20,2))
-                           * CAST(l_discount AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS s22,
-               CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS sy,
+                           * CAST(l_discount AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS s22,
+               CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS sy,
                CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(20,2))
-                           * CAST(l_extendedprice AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS s1y,
+                           * CAST(l_extendedprice AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS s1y,
                CAST(CAST(SUM(CAST(l_discount AS DECIMAL(20,2))
-                           * CAST(l_extendedprice AS DECIMAL(20,2))) AS VARCHAR) AS DOUBLE) AS s2y
+                           * CAST(l_extendedprice AS DECIMAL(20,2))) AS STRING) AS DOUBLE) AS s2y
         FROM lineitem
 """
 
@@ -615,11 +614,11 @@ _SCALER_FORMULAS = {
                 f'''SELECT '{f}' AS feature,
                        CAST(COUNT(*) AS BIGINT) AS n,
                        CAST(COUNT(*) AS DOUBLE) AS n_d,
-                       CAST(CAST(SUM(CAST({f} AS DECIMAL(25,4))) AS VARCHAR) AS DOUBLE) AS s_d,
+                       CAST(CAST(SUM(CAST({f} AS DECIMAL(25,4))) AS STRING) AS DOUBLE) AS s_d,
                        CAST(CAST(SUM(CAST({f} AS DECIMAL(25,4))
-                                     * CAST({f} AS DECIMAL(25,4))) AS VARCHAR) AS DOUBLE) AS ss_d,
-                       CAST(CAST(MIN({f}) AS VARCHAR) AS DOUBLE) AS min_d,
-                       CAST(CAST(MAX({f}) AS VARCHAR) AS DOUBLE) AS max_d
+                                     * CAST({f} AS DECIMAL(25,4))) AS STRING) AS DOUBLE) AS ss_d,
+                       CAST(CAST(MIN({f}) AS STRING) AS DOUBLE) AS min_d,
+                       CAST(CAST(MAX({f}) AS STRING) AS DOUBLE) AS max_d
                 FROM lineitem'''
                 for f in _SCALER_FEATURES
             )}
@@ -640,41 +639,7 @@ def ml_standard_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
     from those scalars via the SAME SQL fragments on both engines.
     At 100 TB the fitted (mean, std) pairs broadcast into the scoring
     projection; nothing row-sized leaves the executors."""
-    li = load_table(spark, sf_dir, "lineitem")
-    aggs = []
-    for f in _SCALER_FEATURES:
-        d = F.col(f).cast("decimal(25,4)")
-        aggs += [
-            F.sum(d).cast("double").alias(f"{f}__s"),
-            F.sum(d * d).cast("double").alias(f"{f}__ss"),
-            F.min(F.col(f)).cast("double").alias(f"{f}__min"),
-            F.max(F.col(f)).cast("double").alias(f"{f}__max"),
-        ]
-    # ONE scan for all three features
-    wide = li.agg(F.count(F.lit(1)).alias("n"), *aggs)
-    parts = [
-        wide.select(
-            F.lit(f).alias("feature"),
-            "n",
-            F.col("n").cast("double").alias("n_d"),
-            F.col(f"{f}__s").alias("s_d"),
-            F.col(f"{f}__ss").alias("ss_d"),
-            F.col(f"{f}__min").alias("min_d"),
-            F.col(f"{f}__max").alias("max_d"),
-        )
-        for f in _SCALER_FEATURES
-    ]
-    stats = parts[0]
-    for p in parts[1:]:
-        stats = stats.unionByName(p)
-    return stats.select(
-        "feature",
-        "n",
-        F.expr(_SCALER_FORMULAS["mean"]).alias("mean"),
-        F.expr(_SCALER_FORMULAS["std"]).alias("std"),
-        F.expr(_SCALER_FORMULAS["z_min"]).alias("z_min"),
-        F.expr(_SCALER_FORMULAS["z_max"]).alias("z_max"),
-    )
+    return run_sql(spark, sf_dir, "ml_standard_scaler")
 
 
 _TE_FORMULA = "(c_sum_d + 50.0 * (g_sum_d / g_n_d)) / (c_n_d + 50.0)"
@@ -689,13 +654,13 @@ _TE_FORMULA = "(c_sum_d + 50.0 * (g_sum_d / g_n_d)) / (c_n_d + 50.0)"
                    CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(COUNT(*) AS DOUBLE) AS c_n_d,
                    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,2)))
-                        AS VARCHAR) AS DOUBLE) AS c_sum_d
+                        AS STRING) AS DOUBLE) AS c_sum_d
             FROM orders GROUP BY o_orderpriority
         ),
         g AS (
             SELECT CAST(COUNT(*) AS DOUBLE) AS g_n_d,
                    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,2)))
-                        AS VARCHAR) AS DOUBLE) AS g_sum_d
+                        AS STRING) AS DOUBLE) AS g_sum_d
             FROM orders
         )
         SELECT category, n,
@@ -713,23 +678,7 @@ def ml_target_encode_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
     category table is model-sized and broadcasts into feature
     projection — the standard leakage-safe categorical encoder for
     gradient-boosted training pipelines."""
-    o = load_table(spark, sf_dir, "orders")
-    d = F.col("o_totalprice").cast("decimal(25,2)")
-    cat = o.groupBy(F.col("o_orderpriority").alias("category")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.lit(1)).cast("double").alias("c_n_d"),
-        F.sum(d).cast("double").alias("c_sum_d"),
-    )
-    glob = o.agg(
-        F.count(F.lit(1)).cast("double").alias("g_n_d"),
-        F.sum(d).cast("double").alias("g_sum_d"),
-    )
-    return cat.crossJoin(F.broadcast(glob)).select(
-        "category",
-        "n",
-        (F.col("c_sum_d") / F.col("c_n_d")).alias("target_mean"),
-        F.expr(_TE_FORMULA).alias("encoded"),
-    )
+    return run_sql(spark, sf_dir, "ml_target_encode_smoothed")
 
 
 _STUMP_BINS = 32
@@ -971,15 +920,7 @@ def ml_one_hot_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema is stable across batches — the property that matters when
     the encoded matrix feeds an incremental trainer. Inferring the
     distinct values instead is one tiny extra agg + broadcast."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        *[
-            (F.col("o_orderpriority") == p).cast("int").alias(f"is_p{i + 1}")
-            for i, p in enumerate(ORDER_PRIORITIES)
-        ],
-    )
+    return run_sql(spark, sf_dir, "ml_one_hot_encode")
 
 
 _QB_QS = (0.25, 0.5, 0.75)
@@ -1144,39 +1085,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     values here; at unbounded-cardinality scores route through the
     two-phase range-partitioned rank, operators/ranks.py) — never a
     |pos|·|neg| pair join."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("score")).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum((F.col("l_returnflag") == "R").cast("int"))
-        .cast("bigint")
-        .alias("pos"),
-    )
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-    cum = grp.select(
-        "cnt",
-        "pos",
-        F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        .cast("bigint")
-        .alias("cum_before"),
-    )
-    agg = cum.agg(
-        F.sum("cnt").cast("bigint").alias("n_total"),
-        F.sum("pos").cast("bigint").alias("npos"),
-        F.sum(
-            F.col("pos")
-            * (F.lit(2) * F.col("cum_before") + F.col("cnt") + F.lit(1))
-        )
-        .cast("bigint")
-        .alias("sum2mr"),
-    )
-    return agg.select(
-        "n_total",
-        "npos",
-        (F.col("n_total") - F.col("npos")).cast("bigint").alias("nneg"),
-        F.expr(_AUC_NUM).alias("auc"),
-    )
+    return run_sql(spark, sf_dir, "ml_roc_auc")
 
 
 _F1 = (
@@ -1233,42 +1142,7 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-threshold rescan. The sweep is the input to PR curves and
     threshold pickers; all counts exact integers, metrics are shared
     double fragments."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("threshold")).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum((F.col("l_returnflag") == "R").cast("int"))
-        .cast("bigint")
-        .alias("pos"),
-    )
-    wd = Window.orderBy(F.col("threshold").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy()
-    cum = grp.select(
-        "threshold",
-        F.sum("pos").over(wd).cast("bigint").alias("tp"),
-        F.sum(F.col("cnt") - F.col("pos")).over(wd).cast("bigint").alias("fp"),
-        F.sum("pos").over(wall).cast("bigint").alias("all_pos"),
-        F.sum(F.col("cnt") - F.col("pos"))
-        .over(wall)
-        .cast("bigint")
-        .alias("all_neg"),
-    )
-    m = cum.select(
-        "threshold",
-        "tp",
-        "fp",
-        (F.col("all_pos") - F.col("tp")).cast("bigint").alias("fn"),
-        (F.col("all_neg") - F.col("fp")).cast("bigint").alias("tn"),
-    )
-    return m.select(
-        "threshold", "tp", "fp", "fn", "tn",
-        (F.col("tp").cast("double") / (F.col("tp") + F.col("fp")).cast("double")).alias("precision"),
-        (F.col("tp").cast("double") / (F.col("tp") + F.col("fn")).cast("double")).alias("recall"),
-        F.expr(_F1).alias("f1"),
-    )
+    return run_sql(spark, sf_dir, "ml_threshold_sweep")
 
 
 @register(
@@ -1354,33 +1228,7 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-aggregation scalar adjustment: at 100 TB a whole λ sweep
     reuses ONE scan's statistics — the reason normal-equation form
     beats SGD for small-d linear models on huge data."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x1 = F.col("l_quantity").cast("decimal(20,2)")
-    x2 = F.col("l_discount").cast("decimal(20,2)")
-    y = F.col("l_extendedprice").cast("decimal(20,2)")
-    s = li.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x1).cast("double").alias("s1"),
-        F.sum(x2).cast("double").alias("s2"),
-        F.sum(x1 * x1).cast("double").alias("s11_raw"),
-        F.sum(x1 * x2).cast("double").alias("s12"),
-        F.sum(x2 * x2).cast("double").alias("s22_raw"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x1 * y).cast("double").alias("s1y"),
-        F.sum(x2 * y).cast("double").alias("s2y"),
-    )
-    adj = s.select(
-        "n", "s1", "s2", "sy", "s1y", "s2y", "s12",
-        (F.col("s11_raw") + F.expr(_RIDGE_LAMBDA)).alias("s11"),
-        (F.col("s22_raw") + F.expr(_RIDGE_LAMBDA)).alias("s22"),
-    )
-    return adj.select(
-        F.col("n").cast("bigint").alias("n"),
-        F.expr(_RIDGE_LAMBDA).cast("double").alias("lambda"),
-        F.expr(_OLS_BETAS["beta0"]).alias("beta0"),
-        F.expr(_OLS_BETAS["beta1"]).alias("beta1"),
-        F.expr(_OLS_BETAS["beta2"]).alias("beta2"),
-    )
+    return run_sql(spark, sf_dir, "ml_ridge_normal_equations")
 
 
 _CORR_FEATURES = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -1393,14 +1241,14 @@ _CORR_FEATURES = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         WITH s AS (
             SELECT CAST(COUNT(*) AS DOUBLE) AS n_d,
                    {", ".join(
-                       f'''CAST(CAST(SUM(CAST({f} AS DECIMAL(25,4))) AS VARCHAR)
+                       f'''CAST(CAST(SUM(CAST({f} AS DECIMAL(25,4))) AS STRING)
                            AS DOUBLE) AS s_{i}'''
                        for i, f in enumerate(_CORR_FEATURES)
                    )},
                    {", ".join(
                        f'''CAST(CAST(SUM(CAST({_CORR_FEATURES[i]} AS DECIMAL(25,4))
                                * CAST({_CORR_FEATURES[j]} AS DECIMAL(25,4)))
-                           AS VARCHAR) AS DOUBLE) AS s_{i}_{j}'''
+                           AS STRING) AS DOUBLE) AS s_{i}_{j}'''
                        for i in range(len(_CORR_FEATURES))
                        for j in range(i, len(_CORR_FEATURES))
                    )}
@@ -1427,41 +1275,7 @@ def ml_feature_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on those scalars, identical on both engines. Extends
     agg_corr_exact (one pair) to the full matrix without extra
     passes."""
-    li = load_table(spark, sf_dir, "lineitem")
-    nf = len(_CORR_FEATURES)
-    dec = {
-        f: F.col(f).cast("decimal(25,4)") for f in _CORR_FEATURES
-    }
-    aggs = [F.count(F.lit(1)).cast("double").alias("n_d")]
-    aggs += [
-        F.sum(dec[f]).cast("double").alias(f"s_{i}")
-        for i, f in enumerate(_CORR_FEATURES)
-    ]
-    aggs += [
-        F.sum(dec[_CORR_FEATURES[i]] * dec[_CORR_FEATURES[j]])
-        .cast("double")
-        .alias(f"s_{i}_{j}")
-        for i in range(nf)
-        for j in range(i, nf)
-    ]
-    s = li.agg(*aggs)
-    parts = [
-        s.select(
-            F.lit(_CORR_FEATURES[i]).alias("feature_x"),
-            F.lit(_CORR_FEATURES[j]).alias("feature_y"),
-            F.expr(
-                f"(n_d * s_{i}_{j} - s_{i} * s_{j})"
-                f" / sqrt((n_d * s_{i}_{i} - s_{i} * s_{i})"
-                f" * (n_d * s_{j}_{j} - s_{j} * s_{j}))"
-            ).alias("corr"),
-        )
-        for i in range(nf)
-        for j in range(i + 1, nf)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return run_sql(spark, sf_dir, "ml_feature_corr_matrix")
 
 
 _GB_F0 = "g_sum_d / g_n_d"  # global mean prediction (round 0)
@@ -1623,11 +1437,11 @@ def ml_gbdt_boost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT j.x, j.y, j.n_xy,
                CAST(CAST(CAST(ln(CAST(j.n_xy AS DOUBLE) * CAST(t.n AS DOUBLE)
                        / (CAST(mx.n_x AS DOUBLE) * CAST(my.n_y AS DOUBLE)))
-                    AS DECIMAL(12,6)) AS VARCHAR) AS DOUBLE) AS pmi,
+                    AS DECIMAL(12,6)) AS STRING) AS DOUBLE) AS pmi,
                CAST(CAST(j.n_xy * CAST(ln(CAST(j.n_xy AS DOUBLE)
                        * CAST(t.n AS DOUBLE)
                        / (CAST(mx.n_x AS DOUBLE) * CAST(my.n_y AS DOUBLE)))
-                    AS DECIMAL(12,6)) AS VARCHAR) AS DOUBLE)
+                    AS DECIMAL(12,6)) AS STRING) AS DOUBLE)
                  / CAST(t.n AS DOUBLE) AS mi_contribution
         FROM joint j
         JOIN mx ON mx.x = j.x
@@ -1644,34 +1458,7 @@ def ml_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution (n_xy·PMI_q exact decimal product, one edge division)
     — Σ contributions = MI. One joint-key shuffle + two broadcast
     marginals at any scale."""
-    o = load_table(spark, sf_dir, "orders")
-    joint = o.groupBy(
-        F.col("o_orderpriority").alias("x"),
-        F.col("o_orderstatus").alias("y"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_xy"))
-    mx = joint.groupBy("x").agg(F.sum("n_xy").cast("bigint").alias("n_x"))
-    my = joint.groupBy("y").agg(F.sum("n_xy").cast("bigint").alias("n_y"))
-    tot = joint.agg(F.sum("n_xy").cast("bigint").alias("n"))
-    pmi_q = F.log(
-        F.col("n_xy").cast("double")
-        * F.col("n").cast("double")
-        / (F.col("n_x").cast("double") * F.col("n_y").cast("double"))
-    ).cast("decimal(12,6)")
-    return (
-        joint.join(F.broadcast(mx), "x")
-        .join(F.broadcast(my), "y")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "x",
-            "y",
-            "n_xy",
-            pmi_q.cast("double").alias("pmi"),
-            (
-                (F.col("n_xy") * pmi_q).cast("double")
-                / F.col("n").cast("double")
-            ).alias("mi_contribution"),
-        )
-    )
+    return run_sql(spark, sf_dir, "ml_mutual_information")
 
 
 _CHI2 = (
@@ -1962,38 +1749,7 @@ def ml_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
     after runs on the K^2-row model relation. The chain IS the model —
     its stationary behavior, top flows, and self-loop mass all read
     off this table."""
-    e = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    steps = e.select(
-        F.col("event_type").alias("next"),
-        F.lag("event_type").over(w).alias("prev"),
-    ).filter(F.col("prev").isNotNull())
-    c = steps.groupBy("prev", "next").agg(F.count(F.lit(1)).alias("cnt"))
-    states = e.select(F.col("event_type").alias("s")).distinct()
-    k = states.agg(F.count(F.lit(1)).alias("k"))
-    matrix = (
-        states.select(F.col("s").alias("prev"))
-        .crossJoin(F.broadcast(states.select(F.col("s").alias("next"))))
-        .join(c, ["prev", "next"], "left")
-        .select("prev", "next", F.coalesce("cnt", F.lit(0)).alias("cnt"))
-    )
-    rowtot = matrix.groupBy("prev").agg(F.sum("cnt").alias("tot"))
-    return (
-        matrix.join(F.broadcast(rowtot), "prev")
-        .crossJoin(F.broadcast(k))
-        .select(
-            "prev",
-            "next",
-            F.col("cnt").cast("bigint").alias("cnt"),
-            (
-                (F.col("cnt") + F.lit(1)).cast("double")
-                / (F.col("tot") + F.col("k")).cast("double")
-            ).alias("prob"),
-        )
-        .orderBy("prev", "next")
-    )
+    return run_sql(spark, sf_dir, "ml_markov_transition")
 
 
 # ---------------------------------------------------------------------------
@@ -2021,10 +1777,10 @@ _T2_GAIN = _STUMP_GAIN  # same exact-integer prefix-sum Gini gain
     tags=("ml", "tree", "agg", "window"),
     oracle=f"""
         WITH rng AS (
-            SELECT CAST(CAST(MIN(l_extendedprice) AS VARCHAR) AS DOUBLE) AS mn1,
-                   CAST(CAST(MAX(l_extendedprice) AS VARCHAR) AS DOUBLE) AS mx1,
-                   CAST(CAST(MIN(l_quantity) AS VARCHAR) AS DOUBLE) AS mn2,
-                   CAST(CAST(MAX(l_quantity) AS VARCHAR) AS DOUBLE) AS mx2
+            SELECT CAST(CAST(MIN(l_extendedprice) AS STRING) AS DOUBLE) AS mn1,
+                   CAST(CAST(MAX(l_extendedprice) AS STRING) AS DOUBLE) AS mx1,
+                   CAST(CAST(MIN(l_quantity) AS STRING) AS DOUBLE) AS mn2,
+                   CAST(CAST(MAX(l_quantity) AS STRING) AS DOUBLE) AS mx2
             FROM lineitem
         ),
         binned AS (
@@ -2114,103 +1870,7 @@ def ml_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram runs on O(leaves·features·bins) rows, so the tree grows
     at 100 TB exactly as it does at sf0.01. Output: the root and both
     child splits with their populations."""
-    li = load_table(spark, sf_dir, "lineitem")
-    from pyspark.sql import Window
-
-    rng = li.agg(
-        F.min("l_extendedprice").cast("double").alias("mn1"),
-        F.max("l_extendedprice").cast("double").alias("mx1"),
-        F.min("l_quantity").cast("double").alias("mn2"),
-        F.max("l_quantity").cast("double").alias("mx2"),
-    )
-    binned = (
-        li.crossJoin(F.broadcast(rng))
-        .select(
-            F.expr(
-                _T2_BIN.format(x="l_extendedprice", mn="mn1", mx="mx1")
-            ).alias("bin1"),
-            F.expr(_T2_BIN.format(x="l_quantity", mn="mn2", mx="mx2")).alias(
-                "bin2"
-            ),
-            (F.col("l_returnflag") == "R").cast("int").alias("pos"),
-        )
-    )
-    def _hist(df, keys):
-        stacked = df.select(
-            *keys,
-            F.expr("stack(2, 1, bin1, 2, bin2)").alias("f", "bin"),
-            "pos",
-        )
-        return stacked.groupBy(*keys, "f", "bin").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("pos").cast("bigint").alias("n_pos"),
-        )
-
-    def _cums(hist, part):
-        w = (
-            Window.partitionBy(*part)
-            .orderBy("bin")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        p = Window.partitionBy(*part)
-        return hist.select(
-            *[c for c in hist.columns if c not in ("n", "n_pos")],
-            F.sum("n").over(w).cast("bigint").alias("cum_n"),
-            F.sum("n_pos").over(w).cast("bigint").alias("cum_pos"),
-            F.sum("n").over(p).cast("bigint").alias("tot_n"),
-            F.sum("n_pos").over(p).cast("bigint").alias("tot_pos"),
-        )
-
-    cum1 = _cums(_hist(binned, []), ["f"])
-    rk1 = Window.orderBy(F.desc(F.expr(_T2_GAIN)), "f", "bin")
-    root = (
-        cum1.withColumn("gain", F.expr(_T2_GAIN))
-        .withColumn("rk", F.row_number().over(rk1))
-        .filter(F.col("rk") == 1)
-        .select("f", "bin", "gain", "tot_n", "tot_pos")
-    )
-    leaves = binned.crossJoin(F.broadcast(root.select(
-        F.col("f").alias("rf"), F.col("bin").alias("rbin")
-    ))).select(
-        F.when(
-            F.when(F.col("rf") == 1, F.col("bin1")).otherwise(F.col("bin2"))
-            <= F.col("rbin"),
-            "left",
-        )
-        .otherwise("right")
-        .alias("leaf"),
-        "bin1",
-        "bin2",
-        "pos",
-    )
-    cum2 = _cums(_hist(leaves, ["leaf"]), ["leaf", "f"])
-    rk2 = Window.partitionBy("leaf").orderBy(
-        F.desc(F.expr(_T2_GAIN)), "f", "bin"
-    )
-    best2 = (
-        cum2.withColumn("gain", F.expr(_T2_GAIN))
-        .filter(F.col("gain").isNotNull())
-        .withColumn("rk", F.row_number().over(rk2))
-        .filter(F.col("rk") == 1)
-        .select("leaf", "f", "bin", "gain", "tot_n", "tot_pos")
-    )
-    out_root = root.select(
-        F.lit("root").alias("node"),
-        F.col("f").alias("feature"),
-        F.col("bin").alias("split_bin"),
-        "gain",
-        F.col("tot_n").alias("n"),
-        F.col("tot_pos").alias("n_pos"),
-    )
-    out_leaf = best2.select(
-        F.col("leaf").alias("node"),
-        F.col("f").alias("feature"),
-        F.col("bin").alias("split_bin"),
-        "gain",
-        F.col("tot_n").alias("n"),
-        F.col("tot_pos").alias("n_pos"),
-    )
-    return out_root.unionAll(out_leaf).orderBy("node")
+    return run_sql(spark, sf_dir, "ml_decision_tree_depth2")
 
 
 # ---------------------------------------------------------------------------
@@ -2537,50 +2197,7 @@ def ml_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     NaN would otherwise diverge, the MCC-guard divergence class.
     Citation for parity scope: reference has no eval surface
     (SURVEY.md round-8 table)."""
-    o = load_table(spark, sf_dir, "orders")
-    lab = o.select(
-        F.col("o_orderstatus").alias("grp"),
-        F.col("o_orderpriority")
-        .isin("1-URGENT", "2-HIGH")
-        .cast("int")
-        .alias("ra"),
-        (F.col("o_totalprice") >= 250000).cast("int").alias("rb"),
-    )
-    c = lab.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(((F.col("ra") == 1) & (F.col("rb") == 1)).cast("int"))
-        .cast("bigint")
-        .alias("n11"),
-        F.sum(((F.col("ra") == 0) & (F.col("rb") == 0)).cast("int"))
-        .cast("bigint")
-        .alias("n00"),
-        F.sum("ra").cast("bigint").alias("a1"),
-        F.sum("rb").cast("bigint").alias("b1"),
-    )
-    n = F.col("n").cast("double")
-    po = (F.col("n11") + F.col("n00")).cast("double") / n
-    pe = (
-        F.col("a1") * F.col("b1")
-        + (F.col("n") - F.col("a1")) * (F.col("n") - F.col("b1"))
-    ).cast("double") / (F.col("n") * F.col("n")).cast("double")
-    return c.select(
-        F.col("grp").alias("o_orderstatus"),
-        "n",
-        "n11",
-        "n00",
-        "a1",
-        "b1",
-        po.alias("po"),
-        pe.alias("pe"),
-        F.when(
-            F.col("a1") * F.col("b1")
-            + (F.col("n") - F.col("a1")) * (F.col("n") - F.col("b1"))
-            == F.col("n") * F.col("n"),
-            F.lit(None).cast("double"),
-        )
-        .otherwise((po - pe) / (F.lit(1.0) - pe))
-        .alias("kappa"),
-    ).orderBy("o_orderstatus")
+    return run_sql(spark, sf_dir, "ml_cohen_kappa")
 
 
 @register(
@@ -2621,29 +2238,7 @@ def ml_mcc_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     representable in a double — sqrt and the final divide are
     correctly-rounded IEEE ops, identical cross-engine. Degenerate
     margins (any zero row/column) emit NULL on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pos = F.col("l_returnflag") == "R"
-    pred = F.col("l_discount") >= 0.05
-    c = li.groupBy(F.col("l_linestatus").alias("grp")).agg(
-        F.sum((pos & pred).cast("int")).cast("bigint").alias("tp"),
-        F.sum(((~pos) & pred).cast("int")).cast("bigint").alias("fp"),
-        F.sum((pos & (~pred)).cast("int")).cast("bigint").alias("fn"),
-        F.sum(((~pos) & (~pred)).cast("int")).cast("bigint").alias("tn"),
-    )
-    tp, fp, fn, tn = (F.col(x) for x in ("tp", "fp", "fn", "tn"))
-    degen = ((tp + fp) * (tp + fn) == 0) | ((tn + fp) * (tn + fn) == 0)
-    mcc = (tp * tn - fp * fn).cast("double") / (
-        F.sqrt(((tp + fp) * (tp + fn)).cast("double"))
-        * F.sqrt(((tn + fp) * (tn + fn)).cast("double"))
-    )
-    return c.select(
-        F.col("grp").alias("l_linestatus"),
-        "tp",
-        "fp",
-        "fn",
-        "tn",
-        F.when(degen, F.lit(None).cast("double")).otherwise(mcc).alias("mcc"),
-    ).orderBy("l_linestatus")
+    return run_sql(spark, sf_dir, "ml_mcc_binary")
 
 
 @register(
@@ -2691,42 +2286,7 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition as agg_equidepth_histogram drops in. Complements
     ml_roc_auc: AP is the metric that collapses when positives are
     rare, AUC is not."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("score")).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum((F.col("l_returnflag") == "R").cast("int"))
-        .cast("bigint")
-        .alias("pos"),
-    )
-    w = Window.orderBy(F.col("score").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy()
-    cum = grp.select(
-        "pos",
-        F.sum("pos").over(w).cast("bigint").alias("tp"),
-        F.sum("cnt").over(w).cast("bigint").alias("nt"),
-        F.sum("pos").over(wall).cast("bigint").alias("npos"),
-        F.sum("cnt").over(wall).cast("bigint").alias("n_total"),
-    )
-    term = (F.col("pos") * F.col("tp")).cast("double") / (
-        F.col("npos") * F.col("nt")
-    ).cast("double")
-    return cum.agg(
-        F.min("npos").alias("npos"),
-        F.min("n_total").alias("n_total"),
-        (
-            F.min("npos").cast("double") / F.min("n_total").cast("double")
-        ).alias("prevalence"),
-        (
-            F.sum(F.floor(term * F.lit(1e12)).cast("decimal(38,0)"))
-            .cast("string")
-            .cast("double")
-            / F.lit(1e12)
-        ).alias("average_precision"),
-    )
+    return run_sql(spark, sf_dir, "ml_pr_auc")
 
 
 # NDCG@k discount table: 1/log2(i+1) computed ONCE in Python and
@@ -2804,82 +2364,7 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ideal ranking is a closed form over the four grade counts. Both
     DCG sums are rel × literal-discount terms floor-quantized at 1e-12
     and summed as integers — order-free, engine-exact."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    items = o.select(
-        F.col("o_orderpriority").alias("g"),
-        "o_totalprice",
-        "o_orderkey",
-        (F.col("o_orderkey") % 4).cast("bigint").alias("rel"),
-    )
-    disc = spark.createDataFrame(
-        [(i, float(d)) for i, d in _NDCG_DISC], "i int, disc double"
-    )
-    # phase 1: per-(group, salt) local top-k — bounded survivor set
-    salted = items.withColumn("salt", (F.col("o_orderkey") % 32).cast("int"))
-    w1 = Window.partitionBy("g", "salt").orderBy(
-        F.col("o_totalprice").desc(), "o_orderkey"
-    )
-    cand = (
-        salted.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= _NDCG_K)
-        .drop("salt", "r1")
-    )
-    # phase 2: exact top-k over <= 32·k survivors per group
-    w2 = Window.partitionBy("g").orderBy(
-        F.col("o_totalprice").desc(), "o_orderkey"
-    )
-    top = cand.withColumn("i", F.row_number().over(w2)).filter(
-        F.col("i") <= _NDCG_K
-    )
-    dcg = (
-        top.join(F.broadcast(disc), "i")
-        .groupBy("g")
-        .agg(
-            qsum(F.col("rel") * F.col("disc"), 12).alias("dcg_q")
-        )
-    )
-    counts = items.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum((F.col("rel") == 3).cast("int")).cast("bigint").alias("n3"),
-        F.sum((F.col("rel") == 2).cast("int")).cast("bigint").alias("n2"),
-        F.sum((F.col("rel") == 1).cast("int")).cast("bigint").alias("n1"),
-    )
-    ideal_rel = (
-        F.when(F.col("i") <= F.col("n3"), 3)
-        .when(F.col("i") <= F.col("n3") + F.col("n2"), 2)
-        .when(F.col("i") <= F.col("n3") + F.col("n2") + F.col("n1"), 1)
-        .otherwise(0)
-    )
-    idcg = (
-        counts.crossJoin(F.broadcast(disc))
-        .groupBy("g")
-        .agg(
-            qsum(ideal_rel * F.col("disc"), 12).alias("idcg_q")
-        )
-    )
-    return (
-        counts.select("g", "n_items")
-        .join(dcg, "g")
-        .join(idcg, "g")
-        .select(
-            F.col("g").alias("o_orderpriority"),
-            "n_items",
-            (F.col("dcg_q").cast("double") / F.lit(1e12)).alias("dcg_at_10"),
-            (F.col("idcg_q").cast("double") / F.lit(1e12)).alias(
-                "idcg_at_10"
-            ),
-            # idcg_q = 0 (all-zero ideal relevance in the top 10) would
-            # be Spark NULL vs DuckDB IEEE NaN — NULL-guard both engines
-            F.when(F.col("idcg_q") == 0, F.lit(None).cast("double"))
-            .otherwise(
-                F.col("dcg_q").cast("double") / F.col("idcg_q").cast("double")
-            )
-            .alias("ndcg_at_10"),
-        )
-        .orderBy("o_orderpriority")
-    )
+    return run_sql(spark, sf_dir, "ml_ndcg_at_k")
 
 
 @register(
@@ -3686,52 +3171,7 @@ def ml_brier_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift can't move a 1e-6 floor except on a ~5e-9 sliver), and
     reduces exact integer count·lnq6 products — order-free. One scan
     feeds both via map-side-combining aggregates."""
-    li = load_table(spark, sf_dir, "lineitem")
-    scored = li.select(
-        F.col("l_linestatus").alias("g"),
-        (2 * F.col("l_quantity").cast("bigint") - 1).alias("p100"),
-        (F.col("l_returnflag") == "R").cast("int").alias("y"),
-    )
-    dev = F.col("p100") - 100 * F.col("y")
-    brier = scored.groupBy("g").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(dev * dev).cast("bigint").alias("bq"),
-    )
-    bins = scored.groupBy("g", "p100", "y").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    lnp = F.when(
-        F.col("y") == 1,
-        F.col("p100").cast("double") / F.lit(100).cast("double"),
-    ).otherwise(
-        (100 - F.col("p100")).cast("double") / F.lit(100).cast("double")
-    )
-    ll = bins.groupBy("g").agg(
-        F.sum(
-            F.col("c")
-            * F.floor(F.lit(1e6) * F.log(lnp)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("lnsum")
-    )
-    return (
-        brier.join(ll, "g")
-        .select(
-            F.col("g").alias("l_linestatus"),
-            "n",
-            (
-                F.col("bq").cast("double")
-                / F.lit(1e4)
-                / F.col("n").cast("double")
-            ).alias("brier"),
-            (
-                -F.col("lnsum").cast("double")
-                / F.lit(1e6)
-                / F.col("n").cast("double")
-            ).alias("log_loss"),
-        )
-        .orderBy("l_linestatus")
-    )
+    return run_sql(spark, sf_dir, "ml_brier_log_loss")
 
 
 @register(
@@ -3798,78 +3238,7 @@ def ml_multiclass_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision·recall float chaining. Every guard emits NULL on both
     engines (the IEEE divergence class). Macro/micro roll-ups are one
     trivial aggregation away and deliberately left to the caller."""
-    o = load_table(spark, sf_dir, "orders")
-    pred = (
-        F.when(F.col("o_totalprice") < 60000, "1-URGENT")
-        .when(F.col("o_totalprice") < 120000, "2-HIGH")
-        .when(F.col("o_totalprice") < 180000, "3-MEDIUM")
-        .when(F.col("o_totalprice") < 240000, "4-NOT SPECIFIED")
-        .otherwise("5-LOW")
-    )
-    cells = (
-        o.select(F.col("o_orderpriority").alias("actual"), pred.alias("pred"))
-        .groupBy("actual", "pred")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    classes = (
-        cells.select(F.col("actual").alias("cls"))
-        .union(cells.select("pred"))
-        .distinct()
-    )
-    joined = classes.join(
-        F.broadcast(cells),
-        (F.col("actual") == F.col("cls")) | (F.col("pred") == F.col("cls")),
-        "left",
-    )
-    prf = joined.groupBy("cls").agg(
-        F.coalesce(
-            F.sum(
-                F.when(
-                    (F.col("actual") == F.col("cls"))
-                    & (F.col("pred") == F.col("cls")),
-                    F.col("c"),
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("tp"),
-        F.coalesce(
-            F.sum(F.when(F.col("pred") == F.col("cls"), F.col("c"))),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("pred_n"),
-        F.coalesce(
-            F.sum(F.when(F.col("actual") == F.col("cls"), F.col("c"))),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("actual_n"),
-    )
-    return prf.select(
-        "cls",
-        "tp",
-        "pred_n",
-        "actual_n",
-        F.when(F.col("pred_n") == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("tp").cast("double") / F.col("pred_n").cast("double"))
-        .alias("precision_c"),
-        F.when(F.col("actual_n") == 0, F.lit(None).cast("double"))
-        .otherwise(
-            F.col("tp").cast("double") / F.col("actual_n").cast("double")
-        )
-        .alias("recall_c"),
-        F.when(
-            F.col("pred_n") + F.col("actual_n") == 0,
-            F.lit(None).cast("double"),
-        )
-        .otherwise(
-            (2 * F.col("tp")).cast("double")
-            / (F.col("pred_n") + F.col("actual_n")).cast("double")
-        )
-        .alias("f1_c"),
-    ).orderBy("cls")
+    return run_sql(spark, sf_dir, "ml_multiclass_prf")
 
 
 # Permutation-importance base: predict extendedprice (cents) from
@@ -4261,18 +3630,18 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         s AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(x1) AS VARCHAR) AS DOUBLE) AS s1,
-                   CAST(CAST(SUM(x2) AS VARCHAR) AS DOUBLE) AS s2,
-                   CAST(CAST(SUM(y)  AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(x1*x1) AS VARCHAR) AS DOUBLE) AS s11,
+                   CAST(CAST(SUM(x1) AS STRING) AS DOUBLE) AS s1,
+                   CAST(CAST(SUM(x2) AS STRING) AS DOUBLE) AS s2,
+                   CAST(CAST(SUM(y)  AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(x1*x1) AS STRING) AS DOUBLE) AS s11,
                    CAST(CAST(SUM(CAST(x1 AS DECIMAL(21,2)) * x2)
-                        AS VARCHAR) AS DOUBLE) AS s12,
-                   CAST(CAST(SUM(x2*x2) AS VARCHAR) AS DOUBLE) AS s22,
+                        AS STRING) AS DOUBLE) AS s12,
+                   CAST(CAST(SUM(x2*x2) AS STRING) AS DOUBLE) AS s22,
                    CAST(CAST(SUM(CAST(x1 AS DECIMAL(21,2)) * y)
-                        AS VARCHAR) AS DOUBLE) AS s1y,
+                        AS STRING) AS DOUBLE) AS s1y,
                    CAST(CAST(SUM(CAST(x2 AS DECIMAL(21,2)) * y)
-                        AS VARCHAR) AS DOUBLE) AS s2y,
-                   CAST(CAST(SUM(y*y) AS VARCHAR) AS DOUBLE) AS syy
+                        AS STRING) AS DOUBLE) AS s2y,
+                   CAST(CAST(SUM(y*y) AS STRING) AS DOUBLE) AS syy
             FROM feat
         ),
         c AS (
@@ -4306,60 +3675,7 @@ def ml_shapley_2feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     shapley_x2 == r2_12 by construction (efficiency axiom, pytest-
     pinned). One corpus scan to ten numbers; everything after is
     constant-sized shared double expressions."""
-    li = load_table(spark, sf_dir, "lineitem")
-    feat = li.select(
-        F.col("l_quantity").cast("decimal(20,2)").alias("x1"),
-        F.col("l_discount").cast("decimal(20,2)").alias("x2"),
-        F.col("l_extendedprice").cast("decimal(20,2)").alias("y"),
-    )
-    wide = lambda c: F.col(c).cast("decimal(21,2)")  # noqa: E731
-    s = feat.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum("x1")).alias("s1"),
-        as_d(F.sum("x2")).alias("s2"),
-        as_d(F.sum("y")).alias("sy"),
-        as_d(F.sum(F.col("x1") * F.col("x1"))).alias("s11"),
-        as_d(F.sum(wide("x1") * F.col("x2"))).alias("s12"),
-        as_d(F.sum(F.col("x2") * F.col("x2"))).alias("s22"),
-        as_d(F.sum(wide("x1") * F.col("y"))).alias("s1y"),
-        as_d(F.sum(wide("x2") * F.col("y"))).alias("s2y"),
-        as_d(F.sum(F.col("y") * F.col("y"))).alias("syy"),
-    )
-    nd_ = F.col("n").cast("double")
-    c = s.select(
-        "n",
-        (F.col("s11") - F.col("s1") * F.col("s1") / nd_).alias("v11"),
-        (F.col("s12") - F.col("s1") * F.col("s2") / nd_).alias("v12"),
-        (F.col("s22") - F.col("s2") * F.col("s2") / nd_).alias("v22"),
-        (F.col("s1y") - F.col("s1") * F.col("sy") / nd_).alias("v1y"),
-        (F.col("s2y") - F.col("s2") * F.col("sy") / nd_).alias("v2y"),
-        (F.col("syy") - F.col("sy") * F.col("sy") / nd_).alias("vyy"),
-    )
-    r = c.select(
-        "n",
-        (F.col("v1y") * F.col("v1y") / (F.col("v11") * F.col("vyy"))).alias("r2_1"),
-        (F.col("v2y") * F.col("v2y") / (F.col("v22") * F.col("vyy"))).alias("r2_2"),
-        (
-            (
-                F.col("v22") * F.col("v1y") * F.col("v1y")
-                - 2 * F.col("v12") * F.col("v1y") * F.col("v2y")
-                + F.col("v11") * F.col("v2y") * F.col("v2y")
-            )
-            / ((F.col("v11") * F.col("v22") - F.col("v12") * F.col("v12")) * F.col("vyy"))
-        ).alias("r2_12"),
-    )
-    return r.select(
-        "n",
-        "r2_1",
-        "r2_2",
-        "r2_12",
-        (F.lit(0.5) * (F.col("r2_1") + (F.col("r2_12") - F.col("r2_2")))).alias(
-            "shapley_x1"
-        ),
-        (F.lit(0.5) * (F.col("r2_2") + (F.col("r2_12") - F.col("r2_1")))).alias(
-            "shapley_x2"
-        ),
-    )
+    return run_sql(spark, sf_dir, "ml_shapley_2feature")
 
 
 @register(
@@ -4587,36 +3903,7 @@ def ml_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     libm-ulp lesson from ts_hurst_rs: JVM and C transcendentals can
     differ in the last ulp on identical inputs; the quantize-then-
     exact pattern absorbs it). One corpus scan to k rows."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per = li.groupBy(F.col("l_returnflag").alias("label")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_c")
-    )
-    tot = per.agg(
-        F.sum("n_c").cast("bigint").alias("n"),
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-    )
-    w = per.crossJoin(F.broadcast(tot)).select(
-        "label",
-        "n_c",
-        (
-            F.col("n").cast("double")
-            / (F.col("k").cast("double") * F.col("n_c").cast("double"))
-        ).alias("w_inverse_freq"),
-        F.floor(
-            F.pow(F.lit(0.9999), F.col("n_c").cast("double")) * F.lit(1e12)
-        )
-        .cast("bigint")
-        .alias("beta_q12"),
-    )
-    return w.select(
-        "label",
-        "n_c",
-        "w_inverse_freq",
-        (
-            F.lit(0.0001) * F.lit(1e12)
-            / (F.lit(1e12) - F.col("beta_q12").cast("double"))
-        ).alias("w_effective_number"),
-    ).orderBy("label")
+    return run_sql(spark, sf_dir, "ml_class_weights")
 
 
 @register(
@@ -5540,11 +4827,11 @@ def ml_bagging_oob_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(x) AS BIGINT) AS sx,
                    CAST(SUM(yc) AS BIGINT) AS sy,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(19,0)) * x)
-                        AS VARCHAR) AS DOUBLE) AS sxx,
+                        AS STRING) AS DOUBLE) AS sxx,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(19,0)) * yc)
-                        AS VARCHAR) AS DOUBLE) AS sxy,
+                        AS STRING) AS DOUBLE) AS sxy,
                    CAST(CAST(SUM(CAST(yc AS DECIMAL(19,0)) * yc)
-                        AS VARCHAR) AS DOUBLE) AS syy
+                        AS STRING) AS DOUBLE) AS syy
             FROM feat
         ),
         fit AS (
@@ -5592,61 +4879,7 @@ def ml_ols_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-20 cut is an exact integer ordering (double-ordered LIMITs
     are the cross-engine tie trap). The per-row pass is a broadcast of
     one 6-number row — nothing quadratic, no hat matrix."""
-    o = load_table(spark, sf_dir, "orders")
-    feat = o.select(
-        "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("yc"),
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date"))
-        .cast("bigint")
-        .alias("x"),
-    )
-    s = feat.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("yc").cast("bigint").alias("sy"),
-        as_d(F.sum(F.col("x").cast("decimal(19,0)") * F.col("x")).cast("decimal(38,0)")).alias("sxx"),
-        as_d(F.sum(F.col("x").cast("decimal(19,0)") * F.col("yc")).cast("decimal(38,0)")).alias("sxy"),
-        as_d(F.sum(F.col("yc").cast("decimal(19,0)") * F.col("yc")).cast("decimal(38,0)")).alias("syy"),
-    )
-    nd_ = F.col("n").cast("double")
-    cxy = F.col("sxy") - F.col("sx").cast("double") * F.col("sy") / nd_
-    cxx = F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / nd_
-    cyy = F.col("syy") - F.col("sy").cast("double") * F.col("sy") / nd_
-    fit = s.select(
-        "n",
-        "sx",
-        "sy",
-        (
-            (nd_ * F.col("sxy") - F.col("sx").cast("double") * F.col("sy"))
-            / (nd_ * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
-        ).alias("b1"),
-        cxx.alias("cxx"),
-        ((cyy - cxy * cxy / cxx) / (nd_ - 2)).alias("mse"),
-    )
-    xbar = F.col("sx").cast("double") / F.col("n")
-    ybar = F.col("sy").cast("double") / F.col("n")
-    h = (
-        F.lit(1.0) / F.col("n")
-        + (F.col("x") - xbar) * (F.col("x") - xbar) / F.col("cxx")
-    )
-    e = F.col("yc") - (ybar + F.col("b1") * (F.col("x") - xbar))
-    cook_q12 = F.floor(
-        (e * e / (2 * F.col("mse")))
-        * (h / ((1 - h) * (1 - h)))
-        * F.lit(1e12)
-    ).cast("bigint")
-    return (
-        feat.crossJoin(F.broadcast(fit))
-        .select(
-            "o_orderkey",
-            h.alias("leverage"),
-            cook_q12.alias("cook_q12"),
-        )
-        .orderBy(F.col("cook_q12").desc(), "o_orderkey")
-        .limit(20)
-    )
+    return run_sql(spark, sf_dir, "ml_ols_influence")
 
 
 @register(
@@ -5978,46 +5211,7 @@ def ml_cost_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     the baselines the picked threshold must beat. |distinct scores|
     rows of work after one grouped scan — never a per-threshold
     rescan."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").cast("bigint").alias("threshold")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("pos"),
-    )
-    tot = grp.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum("pos").cast("bigint").alias("p"),
-    )
-    w = Window.orderBy(F.col("threshold").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grp.select(
-        "threshold",
-        F.sum("cnt").over(w).cast("bigint").alias("pred_pos"),
-        F.sum("pos").over(w).cast("bigint").alias("tp"),
-    )
-    cost = cum.crossJoin(F.broadcast(tot)).select(
-        "threshold",
-        "tp",
-        (F.col("pred_pos") - F.col("tp")).alias("fp"),
-        (F.col("p") - F.col("tp")).alias("fn"),
-        (
-            5 * (F.col("p") - F.col("tp")) + (F.col("pred_pos") - F.col("tp"))
-        ).alias("total_cost"),
-    )
-    best = cost.orderBy("total_cost", F.col("threshold").desc()).limit(1)
-    return best.crossJoin(F.broadcast(tot)).select(
-        F.col("threshold").alias("optimal_threshold"),
-        F.col("tp").cast("bigint").alias("tp"),
-        F.col("fp").cast("bigint").alias("fp"),
-        F.col("fn").cast("bigint").alias("fn"),
-        F.col("total_cost").cast("bigint").alias("total_cost"),
-        (5 * F.col("p")).cast("bigint").alias("cost_reject_all"),
-        (F.col("n") - F.col("p")).cast("bigint").alias("cost_accept_all"),
-    )
+    return run_sql(spark, sf_dir, "ml_cost_optimal_threshold")
 
 
 @register(
@@ -6110,28 +5304,28 @@ def ml_lr_grid_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EN_MOMENTS_SQL = """
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS s1,
+                        AS STRING) AS DOUBLE) AS s1,
                    CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                        * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR)
+                        * CAST(l_quantity AS DECIMAL(12,2))) AS STRING)
                         AS DOUBLE) AS s11,
                    CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS s2,
+                        AS STRING) AS DOUBLE) AS s2,
                    CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2))
-                        * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR)
+                        * CAST(l_discount AS DECIMAL(12,2))) AS STRING)
                         AS DOUBLE) AS s22,
                    CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                        * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR)
+                        * CAST(l_discount AS DECIMAL(12,2))) AS STRING)
                         AS DOUBLE) AS s12,
                    CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-                        AS VARCHAR) AS DOUBLE) AS sy,
+                        AS STRING) AS DOUBLE) AS sy,
                    CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR)
+                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS STRING)
                         AS DOUBLE) AS syy,
                    CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR)
+                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS STRING)
                         AS DOUBLE) AS s1y,
                    CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2))
-                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR)
+                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS STRING)
                         AS DOUBLE) AS s2y
             FROM lineitem
 """
@@ -6141,25 +5335,6 @@ _EN_CORR = {
     "r2y": "(nd * s2y - s2 * sy) / sqrt((nd * s22 - s2 * s2) * (nd * syy - sy * sy))",
     "r12": "(nd * s12 - s1 * s2) / sqrt((nd * s11 - s1 * s1) * (nd * s22 - s2 * s2))",
 }
-
-
-def _en_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity").cast("decimal(12,2)")
-    d = F.col("l_discount").cast("decimal(12,2)")
-    y = F.col("l_extendedprice").cast("decimal(18,2)")
-    return li.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum(q)).alias("s1"),
-        as_d(F.sum(q * q)).alias("s11"),
-        as_d(F.sum(d)).alias("s2"),
-        as_d(F.sum(d * d)).alias("s22"),
-        as_d(F.sum(q * d)).alias("s12"),
-        as_d(F.sum(y)).alias("sy"),
-        as_d(F.sum(y * y)).alias("syy"),
-        as_d(F.sum(q * y)).alias("s1y"),
-        as_d(F.sum(d * y)).alias("s2y"),
-    ).withColumn("nd", F.col("n").cast("double"))
 
 
 @register(
@@ -6207,32 +5382,7 @@ def ml_elastic_net_cd(spark: SparkSession, sf_dir: str) -> DataFrame:
     features would NaN the correlations via sqrt(0) division; the
     fixture's features have documented positive variance (same
     contract as ml_feature_corr_matrix)."""
-    m = _en_moments(spark, sf_dir)
-    r = m.selectExpr(
-        "n",
-        f"{_EN_CORR['r1y']} AS r1y",
-        f"{_EN_CORR['r2y']} AS r2y",
-        f"{_EN_CORR['r12']} AS r12",
-    )
-    w1 = (
-        F.signum(F.col("r1y"))
-        * F.greatest(F.abs(F.col("r1y")) - F.lit(0.05), F.lit(0.0))
-        / F.lit(1.05)
-    )
-    out = r.withColumn("w1", w1)
-    z2 = F.col("r2y") - F.col("w1") * F.col("r12")
-    return out.select(
-        "n",
-        "r1y",
-        "r2y",
-        "r12",
-        "w1",
-        (
-            F.signum(z2)
-            * F.greatest(F.abs(z2) - F.lit(0.05), F.lit(0.0))
-            / F.lit(1.05)
-        ).alias("w2"),
-    )
+    return run_sql(spark, sf_dir, "ml_elastic_net_cd")
 
 
 @register(
@@ -6272,41 +5422,10 @@ def ml_vif_collinearity(spark: SparkSession, sf_dir: str) -> DataFrame:
     - r1^2 - r2^2 - r3^2 — multicollinearity screening (VIF > 5-10 =
     drop or combine) computed from ONE exact-decimal moment agg and a
     single double edge expression; no per-row standardization, no
-    matrix library, shares _en_moments with ml_elastic_net_cd.
+    matrix library, shares _EN_MOMENTS_SQL with ml_elastic_net_cd.
     Class-5: a singular correlation matrix (perfect collinearity,
     det<=0) NULLs every VIF via the same CASE on both engines."""
-    m = _en_moments(spark, sf_dir)
-    r = m.selectExpr(
-        "n",
-        f"{_EN_CORR['r1y']} AS rqy",
-        f"{_EN_CORR['r2y']} AS rdy",
-        f"{_EN_CORR['r12']} AS rqd",
-    )
-    det = (
-        F.lit(1.0)
-        + 2 * F.col("rqy") * F.col("rdy") * F.col("rqd")
-        - F.col("rqy") * F.col("rqy")
-        - F.col("rdy") * F.col("rdy")
-        - F.col("rqd") * F.col("rqd")
-    )
-    d = r.withColumn("det", det)
-    ok = F.col("det") > 0
-    return d.select(
-        "n",
-        "rqy",
-        "rdy",
-        "rqd",
-        "det",
-        F.when(ok, (1 - F.col("rdy") * F.col("rdy")) / F.col("det")).alias(
-            "vif_quantity"
-        ),
-        F.when(ok, (1 - F.col("rqy") * F.col("rqy")) / F.col("det")).alias(
-            "vif_discount"
-        ),
-        F.when(ok, (1 - F.col("rqd") * F.col("rqd")) / F.col("det")).alias(
-            "vif_price"
-        ),
-    )
+    return run_sql(spark, sf_dir, "ml_vif_collinearity")
 
 
 @register(
@@ -6342,15 +5461,15 @@ def ml_vif_collinearity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         s AS (
             SELECT CAST(CAST(SUM(CAST(pos AS DECIMAL(19,0)) * u10)
-                        AS VARCHAR) AS DOUBLE) AS su10,
+                        AS STRING) AS DOUBLE) AS su10,
                    CAST(CAST(SUM(CAST(pos AS DECIMAL(19,0))
                                  * CAST(u10 AS DECIMAL(15,0)) * u10)
-                        AS VARCHAR) AS DOUBLE) AS su10sq,
+                        AS STRING) AS DOUBLE) AS su10sq,
                    CAST(CAST(SUM(CAST(neg AS DECIMAL(19,0)) * u01)
-                        AS VARCHAR) AS DOUBLE) AS su01,
+                        AS STRING) AS DOUBLE) AS su01,
                    CAST(CAST(SUM(CAST(neg AS DECIMAL(19,0))
                                  * CAST(u01 AS DECIMAL(15,0)) * u01)
-                        AS VARCHAR) AS DOUBLE) AS su01sq
+                        AS STRING) AS DOUBLE) AS su01sq
             FROM u
         )
         SELECT t.m AS n_pos, t.n AS n_neg,
@@ -6392,82 +5511,7 @@ def ml_delong_auc_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a |pos|x|neg| pair join. AUC here equals ml_roc_auc's
     midrank identity by construction — the reference test pins both
     to a direct numpy computation."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("score")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum((F.col("l_returnflag") == "R").cast("int"))
-        .cast("bigint")
-        .alias("pos"),
-    )
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-    cum = grp.select(
-        "cnt",
-        "pos",
-        (F.col("cnt") - F.col("pos")).alias("neg"),
-        F.coalesce(F.sum(F.col("cnt") - F.col("pos")).over(w), F.lit(0))
-        .cast("bigint")
-        .alias("cnb"),
-        F.coalesce(F.sum("pos").over(w), F.lit(0))
-        .cast("bigint")
-        .alias("cpb"),
-    )
-    tot = grp.agg(
-        F.sum("pos").cast("bigint").alias("m"),
-        F.sum(F.col("cnt") - F.col("pos")).cast("bigint").alias("n"),
-    )
-    u = cum.crossJoin(F.broadcast(tot)).select(
-        "pos",
-        "neg",
-        "m",
-        "n",
-        (2 * F.col("cnb") + F.col("neg")).alias("u10"),
-        (2 * (F.col("m") - F.col("cpb") - F.col("pos")) + F.col("pos")).alias(
-            "u01"
-        ),
-    )
-    s = u.groupBy("m", "n").agg(
-        as_d(F.sum(F.col("pos").cast("decimal(19,0)") * F.col("u10"))).alias(
-            "su10"
-        ),
-        as_d(
-            F.sum(
-                F.col("pos").cast("decimal(19,0)")
-                * F.col("u10").cast("decimal(15,0)")
-                * F.col("u10")
-            )
-        ).alias("su10sq"),
-        as_d(F.sum(F.col("neg").cast("decimal(19,0)") * F.col("u01"))).alias(
-            "su01"
-        ),
-        as_d(
-            F.sum(
-                F.col("neg").cast("decimal(19,0)")
-                * F.col("u01").cast("decimal(15,0)")
-                * F.col("u01")
-            )
-        ).alias("su01sq"),
-    )
-    m_d = F.col("m").cast("double")
-    n_d = F.col("n").cast("double")
-    auc = F.col("su10") / (2 * n_d * m_d)
-    auc01 = F.col("su01") / (2 * m_d * n_d)
-    s10 = (
-        F.col("su10sq") / (4 * n_d * n_d) - m_d * auc * auc
-    ) / (m_d - 1)
-    s01 = (
-        F.col("su01sq") / (4 * m_d * m_d) - n_d * auc01 * auc01
-    ) / (n_d - 1)
-    return s.select(
-        F.col("m").alias("n_pos"),
-        F.col("n").alias("n_neg"),
-        auc.alias("auc"),
-        F.when(
-            (F.col("m") > 1) & (F.col("n") > 1),
-            F.sqrt(s10 / m_d + s01 / n_d),
-        ).alias("delong_se"),
-    )
+    return run_sql(spark, sf_dir, "ml_delong_auc_se")
 
 
 @register(
@@ -6946,57 +5990,7 @@ def ml_youden_j(spark: SparkSession, sf_dir: str) -> DataFrame:
     at unbounded cardinality, as documented on ml_roc_auc). all_pos
     and all_neg are both nonzero in any fixture with both labels —
     documented, and the J numerator needs no division anyway."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("threshold")).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum((F.col("l_returnflag") == "R").cast("int"))
-        .cast("bigint")
-        .alias("pos"),
-    )
-    wd = Window.orderBy(F.col("threshold").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy()
-    cum = grp.select(
-        "threshold",
-        F.sum("pos").over(wd).cast("bigint").alias("tp"),
-        F.sum(F.col("cnt") - F.col("pos")).over(wd).cast("bigint").alias("fp"),
-        F.sum("pos").over(wall).cast("bigint").alias("all_pos"),
-        F.sum(F.col("cnt") - F.col("pos"))
-        .over(wall)
-        .cast("bigint")
-        .alias("all_neg"),
-    )
-    scored = cum.withColumn(
-        "j_num",
-        (F.col("tp") * F.col("all_neg") - F.col("fp") * F.col("all_pos"))
-        .cast("bigint"),
-    )
-    wbest = Window.orderBy(F.col("j_num").desc(), F.col("threshold"))
-    return (
-        scored.withColumn("rk", F.row_number().over(wbest))
-        .filter(F.col("rk") == 1)
-        .select(
-            F.col("threshold").alias("best_threshold"),
-            "tp",
-            "fp",
-            (F.col("tp").cast("double") / F.col("all_pos").cast("double")).alias(
-                "tpr"
-            ),
-            (F.col("fp").cast("double") / F.col("all_neg").cast("double")).alias(
-                "fpr"
-            ),
-            (
-                F.col("j_num").cast("double")
-                / (
-                    F.col("all_pos").cast("double")
-                    * F.col("all_neg").cast("double")
-                )
-            ).alias("youden_j"),
-        )
-    )
+    return run_sql(spark, sf_dir, "ml_youden_j")
 
 
 @register(
@@ -7030,43 +6024,7 @@ def ml_precision_at_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-empty because the all-positive threshold has recall 1). Same
     |distinct scores| sweep relation as ml_youden_j /
     ml_threshold_sweep."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("threshold")).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum((F.col("l_returnflag") == "R").cast("int"))
-        .cast("bigint")
-        .alias("pos"),
-    )
-    wd = Window.orderBy(F.col("threshold").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy()
-    cum = grp.select(
-        "threshold",
-        F.sum("pos").over(wd).cast("bigint").alias("tp"),
-        F.sum(F.col("cnt") - F.col("pos")).over(wd).cast("bigint").alias("fp"),
-        F.sum("pos").over(wall).cast("bigint").alias("all_pos"),
-    )
-    feas = cum.filter(F.col("tp") * 10 >= F.col("all_pos") * 8)
-    prec = F.col("tp").cast("double") / (F.col("tp") + F.col("fp")).cast(
-        "double"
-    )
-    wbest = Window.orderBy(prec.desc(), F.col("threshold").desc())
-    return (
-        feas.withColumn("rk", F.row_number().over(wbest))
-        .filter(F.col("rk") == 1)
-        .select(
-            F.col("threshold").alias("best_threshold"),
-            "tp",
-            "fp",
-            prec.alias("precision_"),
-            (F.col("tp").cast("double") / F.col("all_pos").cast("double")).alias(
-                "recall_"
-            ),
-        )
-    )
+    return run_sql(spark, sf_dir, "ml_precision_at_recall")
 
 
 # ML-eval queries: score = l_quantity, label = l_returnflag 'R' (the
@@ -7128,47 +6086,7 @@ def ml_score_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     npos*nneg happens once at the edge. Deterministic earliest-score
     argmax tiebreak. Class balance is a fixture invariant (both
     classes populated at every SF)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("score")).agg(
-        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("pos"),
-        F.sum(F.when(F.col("l_returnflag") != "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("neg"),
-    )
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)
-    cum = grp.select(
-        "score",
-        F.sum("pos").over(w).alias("cpos"),
-        F.sum("neg").over(w).alias("cneg"),
-    )
-    tot = grp.agg(
-        F.sum("pos").cast("bigint").alias("npos"),
-        F.sum("neg").cast("bigint").alias("nneg"),
-    )
-    gaps = cum.crossJoin(F.broadcast(tot)).select(
-        "score",
-        F.abs(F.col("cpos") * F.col("nneg") - F.col("cneg") * F.col("npos"))
-        .cast("bigint")
-        .alias("gap"),
-        "npos",
-        "nneg",
-    )
-    wbest = Window.orderBy(F.col("gap").desc(), "score")
-    return (
-        gaps.withColumn("pk", F.row_number().over(wbest))
-        .filter(F.col("pk") == 1)
-        .select(
-            "npos",
-            "nneg",
-            (
-                F.col("gap").cast("double")
-                / (F.col("npos").cast("double") * F.col("nneg"))
-            ).alias("ks_stat"),
-            F.col("score").alias("ks_threshold"),
-        )
-    )
+    return run_sql(spark, sf_dir, "ml_score_ks")
 
 
 @register(
@@ -7209,21 +6127,21 @@ def ml_score_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM cum CROSS JOIN tot
         )
         SELECT tot.npos, tot.nneg,
-               CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
+               CAST(CAST(pairs.concordant AS STRING) AS DOUBLE)
                    AS n_concordant,
-               CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE)
+               CAST(CAST(pairs.discordant AS STRING) AS DOUBLE)
                    AS n_discordant,
-               CAST(CAST(pairs.tied_score AS VARCHAR) AS DOUBLE) AS n_tied,
-               (CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
-                - CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE))
+               CAST(CAST(pairs.tied_score AS STRING) AS DOUBLE) AS n_tied,
+               (CAST(CAST(pairs.concordant AS STRING) AS DOUBLE)
+                - CAST(CAST(pairs.discordant AS STRING) AS DOUBLE))
                  / (CAST(tot.npos AS DOUBLE) * tot.nneg) AS somers_d,
-               CASE WHEN CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
-                         + CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE)
+               CASE WHEN CAST(CAST(pairs.concordant AS STRING) AS DOUBLE)
+                         + CAST(CAST(pairs.discordant AS STRING) AS DOUBLE)
                          > 0 THEN
-                 (CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
-                  - CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE))
-                 / (CAST(CAST(pairs.concordant AS VARCHAR) AS DOUBLE)
-                    + CAST(CAST(pairs.discordant AS VARCHAR) AS DOUBLE))
+                 (CAST(CAST(pairs.concordant AS STRING) AS DOUBLE)
+                  - CAST(CAST(pairs.discordant AS STRING) AS DOUBLE))
+                 / (CAST(CAST(pairs.concordant AS STRING) AS DOUBLE)
+                    + CAST(CAST(pairs.discordant AS STRING) AS DOUBLE))
                END AS gk_gamma
         FROM pairs CROSS JOIN tot
     """,
@@ -7240,51 +6158,7 @@ def ml_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     are decimal38, VARCHAR-routed to double for presentation. gamma
     NULLs if every pair is score-tied (degenerate single-score
     fixture — impossible here, guarded anyway)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    grp = li.groupBy(F.col("l_quantity").alias("score")).agg(
-        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("pos"),
-        F.sum(F.when(F.col("l_returnflag") != "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("neg"),
-    )
-    w_prev = Window.orderBy("score").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = grp.select(
-        "pos",
-        "neg",
-        F.coalesce(F.sum("neg").over(w_prev), F.lit(0)).alias("neg_below"),
-    )
-    tot = grp.agg(
-        F.sum("pos").cast("bigint").alias("npos"),
-        F.sum("neg").cast("bigint").alias("nneg"),
-    )
-    posD = F.col("pos").cast("decimal(38,0)")
-    pairs = cum.crossJoin(F.broadcast(tot)).agg(
-        F.sum(posD * F.col("neg_below")).cast("decimal(38,0)").alias(
-            "concordant"
-        ),
-        F.sum(posD * (F.col("nneg") - F.col("neg_below") - F.col("neg")))
-        .cast("decimal(38,0)")
-        .alias("discordant"),
-        F.sum(posD * F.col("neg")).cast("decimal(38,0)").alias("tied_score"),
-    )
-    c_d = as_d(F.col("concordant"))
-    d_d = as_d(F.col("discordant"))
-    t_d = as_d(F.col("tied_score"))
-    return pairs.crossJoin(F.broadcast(tot)).select(
-        "npos",
-        "nneg",
-        c_d.alias("n_concordant"),
-        d_d.alias("n_discordant"),
-        t_d.alias("n_tied"),
-        ((c_d - d_d) / (F.col("npos").cast("double") * F.col("nneg"))).alias(
-            "somers_d"
-        ),
-        F.when(c_d + d_d > 0, (c_d - d_d) / (c_d + d_d)).alias("gk_gamma"),
-    )
+    return run_sql(spark, sf_dir, "ml_somers_d")
 
 
 @register(
@@ -7403,16 +6277,16 @@ def ml_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT tot.s AS n, tot.c AS n_correct,
                CAST(tot.c AS DOUBLE) / tot.s AS accuracy,
                CASE WHEN (CAST(tot.s AS DOUBLE) * tot.s
-                          - CAST(CAST(m.sum_t2 AS VARCHAR) AS DOUBLE)) > 0
+                          - CAST(CAST(m.sum_t2 AS STRING) AS DOUBLE)) > 0
                          AND (CAST(tot.s AS DOUBLE) * tot.s
-                              - CAST(CAST(m.sum_p2 AS VARCHAR) AS DOUBLE)) > 0
+                              - CAST(CAST(m.sum_p2 AS STRING) AS DOUBLE)) > 0
                THEN
                  (CAST(tot.c AS DOUBLE) * tot.s
-                  - CAST(CAST(m.sum_tp AS VARCHAR) AS DOUBLE))
+                  - CAST(CAST(m.sum_tp AS STRING) AS DOUBLE))
                  / sqrt((CAST(tot.s AS DOUBLE) * tot.s
-                         - CAST(CAST(m.sum_t2 AS VARCHAR) AS DOUBLE))
+                         - CAST(CAST(m.sum_t2 AS STRING) AS DOUBLE))
                         * (CAST(tot.s AS DOUBLE) * tot.s
-                           - CAST(CAST(m.sum_p2 AS VARCHAR) AS DOUBLE)))
+                           - CAST(CAST(m.sum_p2 AS STRING) AS DOUBLE)))
                END AS mcc
         FROM tot CROSS JOIN m
     """,
@@ -7430,57 +6304,7 @@ def ml_mcc_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-class edges (either marginal concentrated on one class)
     NULL R_K identically on both engines. One corpus hash agg on the
     9-cell confusion."""
-    li = load_table(spark, sf_dir, "lineitem")
-    labeled = li.select(
-        F.col("l_returnflag").alias("truth"),
-        F.when(F.col("l_quantity") < 17, "A")
-        .when(F.col("l_quantity") < 34, "N")
-        .otherwise("R")
-        .alias("pred"),
-    )
-    cells = labeled.groupBy("truth", "pred").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    t = cells.groupBy(F.col("truth").alias("k")).agg(
-        F.sum("n").cast("bigint").alias("tk")
-    )
-    p = cells.groupBy(F.col("pred").alias("k2")).agg(
-        F.sum("n").cast("bigint").alias("pk")
-    )
-    marg = t.join(p, t.k == p.k2, "full").select(
-        F.coalesce(F.col("tk"), F.lit(0)).alias("tk"),
-        F.coalesce(F.col("pk"), F.lit(0)).alias("pk"),
-    )
-    m = marg.agg(
-        F.sum(F.col("tk").cast("decimal(38,0)") * F.col("pk"))
-        .cast("decimal(38,0)")
-        .alias("sum_tp"),
-        F.sum(F.col("tk").cast("decimal(38,0)") * F.col("tk"))
-        .cast("decimal(38,0)")
-        .alias("sum_t2"),
-        F.sum(F.col("pk").cast("decimal(38,0)") * F.col("pk"))
-        .cast("decimal(38,0)")
-        .alias("sum_p2"),
-    )
-    tot = cells.agg(
-        F.sum("n").cast("bigint").alias("s"),
-        F.sum(F.when(F.col("truth") == F.col("pred"), F.col("n")).otherwise(0))
-        .cast("bigint")
-        .alias("c"),
-    )
-    s_d = F.col("s").cast("double")
-    den_t = s_d * F.col("s") - as_d(F.col("sum_t2"))
-    den_p = s_d * F.col("s") - as_d(F.col("sum_p2"))
-    return tot.crossJoin(F.broadcast(m)).select(
-        F.col("s").alias("n"),
-        F.col("c").alias("n_correct"),
-        (F.col("c").cast("double") / F.col("s")).alias("accuracy"),
-        F.when(
-            (den_t > 0) & (den_p > 0),
-            (F.col("c").cast("double") * F.col("s") - as_d(F.col("sum_tp")))
-            / F.sqrt(den_t * den_p),
-        ).alias("mcc"),
-    )
+    return run_sql(spark, sf_dir, "ml_mcc_multiclass")
 
 
 @register(
@@ -8397,61 +7221,7 @@ def ml_topk_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent from a bin rank NULL and miss exactly — LEFT join keeps the
     row in n); accuracies are single divisions. One scan + one
     grid-sized window."""
-    o = load_table(spark, sf_dir, "orders")
-    rng = o.agg(
-        F.min("o_totalprice").alias("pmin"), F.max("o_totalprice").alias("pmax")
-    )
-    coded = o.crossJoin(F.broadcast(rng)).select(
-        F.col("o_orderpriority").alias("actual"),
-        F.when(F.col("pmax") == F.col("pmin"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(7),
-                F.floor(
-                    (F.col("o_totalprice").cast("double")
-                     - F.col("pmin").cast("double"))
-                    / ((F.col("pmax").cast("double")
-                        - F.col("pmin").cast("double")) / F.lit(8.0))
-                ).cast("int"),
-            )
-        ).alias("bin"),
-    )
-    wrk = Window.partitionBy("bin").orderBy(
-        F.col("cnt").desc(), F.col("cl")
-    )
-    ranked = (
-        coded.groupBy("bin", F.col("actual").alias("cl"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("rk", F.row_number().over(wrk))
-        .select("bin", "cl", "rk")
-    )
-    hits = (
-        coded.join(
-            F.broadcast(ranked),
-            (coded.bin == ranked.bin) & (coded.actual == ranked.cl),
-            "left",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("rk") == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("top1"),
-            F.sum(F.when(F.col("rk") <= 2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("top2"),
-        )
-    )
-    return hits.select(
-        "n",
-        F.col("top1").alias("top1_correct"),
-        F.col("top2").alias("top2_correct"),
-        (F.col("top1").cast("double") / F.col("n").cast("double")).alias(
-            "top1_acc"
-        ),
-        (F.col("top2").cast("double") / F.col("n").cast("double")).alias(
-            "top2_acc"
-        ),
-    )
+    return run_sql(spark, sf_dir, "ml_topk_accuracy")
 
 
 # ---------------------------------------------------------------------------
@@ -8632,12 +7402,12 @@ def ml_psi_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM ri CROSS JOIN cj
         )
         SELECT t.n,
-               CAST(CAST(od.sum_od AS VARCHAR) AS BIGINT) AS obs_disagree,
-               CAST(CAST(ed.sum_ed AS VARCHAR) AS DOUBLE) AS exp_disagree_xn,
+               CAST(CAST(od.sum_od AS STRING) AS BIGINT) AS obs_disagree,
+               CAST(CAST(ed.sum_ed AS STRING) AS DOUBLE) AS exp_disagree_xn,
                CASE WHEN ed.sum_ed > 0 THEN
                  1.0 - (CAST(t.n AS DOUBLE)
-                        * CAST(CAST(od.sum_od AS VARCHAR) AS DOUBLE))
-                       / CAST(CAST(ed.sum_ed AS VARCHAR) AS DOUBLE)
+                        * CAST(CAST(od.sum_od AS STRING) AS DOUBLE))
+                       / CAST(CAST(ed.sum_ed AS STRING) AS DOUBLE)
                END AS weighted_kappa
         FROM tot t, od, ed
     """,
@@ -8652,69 +7422,7 @@ def ml_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell disagreement mass, marginal-product expectation) up to ONE
     guarded double division; the quintile bin reuses stat_gk_gamma's
     guarded arithmetic. One scan + a 25-cell grid."""
-    o = load_table(spark, sf_dir, "orders")
-    rng = o.agg(
-        F.min("o_totalprice").alias("pmin"), F.max("o_totalprice").alias("pmax")
-    )
-    coded = o.crossJoin(F.broadcast(rng)).select(
-        F.substring("o_orderpriority", 1, 1).cast("int").alias("i"),
-        (
-            F.when(F.col("pmax") == F.col("pmin"), F.lit(1)).otherwise(
-                F.least(
-                    F.lit(4),
-                    F.floor(
-                        (F.col("o_totalprice").cast("double")
-                         - F.col("pmin").cast("double"))
-                        / ((F.col("pmax").cast("double")
-                            - F.col("pmin").cast("double")) / F.lit(5.0))
-                    ).cast("int"),
-                )
-                + 1
-            )
-        ).alias("j"),
-    )
-    cells = coded.groupBy("i", "j").agg(
-        F.count(F.lit(1)).cast("bigint").alias("o")
-    )
-    ri = cells.groupBy("i").agg(F.sum("o").cast("bigint").alias("r"))
-    cj = cells.groupBy("j").agg(F.sum("o").cast("bigint").alias("c"))
-    tot = cells.agg(F.sum("o").cast("bigint").alias("n"))
-    od = cells.agg(
-        F.sum(
-            F.col("o").cast("decimal(38,0)") * F.abs(F.col("i") - F.col("j"))
-        )
-        .cast("decimal(38,0)")
-        .alias("sum_od")
-    )
-    ed = ri.crossJoin(cj).agg(
-        F.sum(
-            F.col("r").cast("decimal(38,0)")
-            * F.col("c")
-            * F.abs(F.col("i") - F.col("j"))
-        )
-        .cast("decimal(38,0)")
-        .alias("sum_ed")
-    )
-    return (
-        tot.crossJoin(F.broadcast(od))
-        .crossJoin(F.broadcast(ed))
-        .select(
-            "n",
-            F.col("sum_od").cast("string").cast("bigint").alias("obs_disagree"),
-            F.col("sum_ed").cast("string").cast("double").alias(
-                "exp_disagree_xn"
-            ),
-            F.when(
-                F.col("sum_ed") > 0,
-                F.lit(1.0)
-                - (
-                    F.col("n").cast("double")
-                    * F.col("sum_od").cast("string").cast("double")
-                )
-                / F.col("sum_ed").cast("string").cast("double"),
-            ).alias("weighted_kappa"),
-        )
-    )
+    return run_sql(spark, sf_dir, "ml_weighted_kappa")
 
 
 # ---------------------------------------------------------------------------
@@ -9002,31 +7710,4 @@ def ml_balanced_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sensitivity, and specificity are each one guarded double
     expression with identical degenerate-class predicates on both
     engines. Scale: one scan, k-status-row state."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pred = F.col("l_discount") >= 0.05
-    pos = F.col("l_returnflag") == "R"
-    conf = li.groupBy(F.col("l_linestatus").alias("status")).agg(
-        F.sum((pred & pos).cast("int")).cast("bigint").alias("tp"),
-        F.sum((pred & ~pos).cast("int")).cast("bigint").alias("fp"),
-        F.sum((~pred & pos).cast("int")).cast("bigint").alias("fn"),
-        F.sum((~pred & ~pos).cast("int")).cast("bigint").alias("tn"),
-    )
-    tpr = F.col("tp").cast("double") / (F.col("tp") + F.col("fn")).cast(
-        "double"
-    )
-    tnr = F.col("tn").cast("double") / (F.col("tn") + F.col("fp")).cast(
-        "double"
-    )
-    has_pos = (F.col("tp") + F.col("fn")) > 0
-    has_neg = (F.col("tn") + F.col("fp")) > 0
-    return conf.select(
-        "status",
-        "tp",
-        "fp",
-        "fn",
-        "tn",
-        F.when(has_pos & has_neg, (tpr + tnr) / F.lit(2).cast("double"))
-        .alias("balanced_accuracy"),
-        F.when(has_pos, tpr).alias("sensitivity"),
-        F.when(has_neg, tnr).alias("specificity"),
-    ).orderBy("status")
+    return run_sql(spark, sf_dir, "ml_balanced_accuracy")

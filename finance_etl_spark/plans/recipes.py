@@ -54,26 +54,8 @@ SEG_DAILY_SQL = """
 """
 
 
-def seg_pnl_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(segment, d, pnl_cents): signed daily order flow per segment in
-    exact integer cents — filled orders count +, all others −."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cents = (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(F.when(F.col("o_orderstatus") == "F", cents).otherwise(-cents))
-            .cast("bigint")
-            .alias("pnl_cents")
-        )
-    )
-
-
+# (segment, d, pnl_cents): signed daily order flow per segment in exact
+# integer cents — filled orders count +, all others −.
 SEG_PNL_DAILY_SQL = """
             SELECT c.c_mktsegment AS segment, CAST(o.o_orderdate AS DATE) AS d,
                    CAST(SUM(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE -1 END
@@ -94,8 +76,8 @@ def ret_q9(cur: Column, prev: Column) -> Column:
 def o_ret_q9(cur: str, prev: str) -> str:
     """DuckDB twin of ret_q9."""
     return (
-        f"CAST(FLOOR((CAST(CAST({cur} AS VARCHAR) AS DOUBLE)"
-        f" / CAST(CAST({prev} AS VARCHAR) AS DOUBLE)"
+        f"CAST(FLOOR((CAST(CAST({cur} AS STRING) AS DOUBLE)"
+        f" / CAST(CAST({prev} AS STRING) AS DOUBLE)"
         " - CAST(1 AS DOUBLE)) * CAST(1e9 AS DOUBLE)) AS BIGINT)"
     )
 
@@ -111,9 +93,9 @@ def dd_q6(peak: Column, x: Column) -> Column:
 def o_dd_q6(peak: str, x: str) -> str:
     """DuckDB twin of dd_q6."""
     return (
-        f"CAST(FLOOR((CAST(CAST({peak} AS VARCHAR) AS DOUBLE)"
-        f" - CAST(CAST({x} AS VARCHAR) AS DOUBLE))"
-        f" / CAST(CAST({peak} AS VARCHAR) AS DOUBLE)"
+        f"CAST(FLOOR((CAST(CAST({peak} AS STRING) AS DOUBLE)"
+        f" - CAST(CAST({x} AS STRING) AS DOUBLE))"
+        f" / CAST(CAST({peak} AS STRING) AS DOUBLE)"
         " * CAST(100 AS DOUBLE) * CAST(1e6 AS DOUBLE)) AS BIGINT)"
     )
 
@@ -161,24 +143,8 @@ MKT_RET_SQL = f"""
         )"""
 
 
-def market_model_sums(daily: DataFrame) -> DataFrame:
-    """(segment, n, sr, sm, srm, smm): exact sufficient sums of each
-    segment's q9 return r on the market return m, off seg_daily."""
-    j = (
-        seg_returns(daily)
-        .join(F.broadcast(mkt_returns(daily)), "d")
-        .select("segment", "r", "m")
-    )
-    return j.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("r").cast("bigint").alias("sr"),
-        F.sum("m").cast("bigint").alias("sm"),
-        as_d(F.sum(F.col("r").cast("decimal(19,0)") * F.col("m"))).alias("srm"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("smm"),
-    )
-
-
-# DuckDB twin of market_model_sums (CTE s), with the daily series.
+# (segment, n, sr, sm, srm, smm) in CTE s: exact sufficient sums of each
+# segment's q9 return r on the market return m, with the daily series.
 MARKET_MODEL_SQL = f"""
         daily AS ({SEG_DAILY_SQL}),
         {MKT_RET_SQL},
@@ -188,9 +154,9 @@ MARKET_MODEL_SQL = f"""
             SELECT segment, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(r) AS BIGINT) AS sr,
                    CAST(SUM(m) AS BIGINT) AS sm,
-                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * m) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(r AS DECIMAL(19,0)) * m) AS STRING)
                         AS DOUBLE) AS srm,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS STRING)
                         AS DOUBLE) AS smm
             FROM j GROUP BY segment
         )"""
@@ -450,16 +416,9 @@ def midranks2(df: DataFrame, col: str, bucket_div: int) -> DataFrame:
     )
 
 
-def phi2_cell() -> Column:
-    """Per-cell contribution (po - pr·pc)² / (pr·pc) to φ² of a
-    contingency table whose rows carry the cell count o, its row and
-    column margins nr, nc and the total n (all integers)."""
-    po = F.col("o").cast("double") / F.col("n").cast("double")
-    pr = F.col("nr").cast("double") / F.col("n").cast("double")
-    pc = F.col("nc").cast("double") / F.col("n").cast("double")
-    return (po - pr * pc) * (po - pr * pc) / (pr * pc)
-
-
+# Per-cell contribution (po - pr·pc)² / (pr·pc) to φ² of a contingency
+# table whose rows carry the cell count o, its row and column margins nr,
+# nc and the total n (all integers).
 _PO = "CAST(o AS DOUBLE) / CAST(n AS DOUBLE)"
 _PRC = (
     "(CAST(nr AS DOUBLE) / CAST(n AS DOUBLE))"
@@ -611,7 +570,7 @@ CUSUM_CHANGEPOINT_SQL = f"""
             FROM dev
         )
         SELECT event_type, n, CAST(rn AS BIGINT) AS cp_index, d AS cp_date,
-               CAST(CAST(dabs AS VARCHAR) AS DOUBLE)
+               CAST(CAST(dabs AS STRING) AS DOUBLE)
                  / (CAST(n AS DOUBLE) * 1e6) AS cusum_peak,
                CAST(prefix AS DOUBLE) / (CAST(rn AS DOUBLE) * 1e6)
                    AS mean_before,

@@ -54,6 +54,16 @@ their fixes — check new queries against all three:
    prove the fixture+schema can't produce it (say so in the docstring)
    or guard it identically in builder and oracle.
 
+New-query checklist, first item: write the query once. When Spark and
+DuckDB both parse the oracle text and return the same rows, names and
+types, the builder is ``return run_sql(spark, sf_dir, "<name>")`` and
+there is no DataFrame twin. Spell casts ``CAST(x AS STRING)``: DuckDB
+reads STRING as VARCHAR, Spark has no bare VARCHAR. Keep a DataFrame
+builder only where it exercises a Spark-only path (operators, UDFs,
+streams, sinks) or where the text is slower at sf0.1 or scales worse
+(a ``NOT IN`` subquery inside an aggregate plans as a null-aware
+nested-loop join; a pairwise ``a.x > b.x`` join is quadratic).
+
 New-query checklist, last item: use the recipe modules; never inline a
 twin. Column-level recipes (dsum/fsum/as_d/ordered_fold_sum and their
 o_-prefixed SQL twins) live in functions/money.py; table-level
@@ -68,6 +78,7 @@ from __future__ import annotations
 import atexit
 import functools
 import os
+import re
 import shutil
 import tempfile
 from collections.abc import Callable
@@ -75,6 +86,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from finance_etl_spark.io.readers import TABLES, register_views
 from finance_etl_spark.session import configure
 
 
@@ -119,6 +131,16 @@ def register(
         return fn
 
     return deco
+
+
+def run_sql(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Build query ``name`` from its registered oracle text: the one
+    string both engines parse runs on Spark over ``load_table`` views of
+    the tables it names (temp views of this session, replaced per call)."""
+    text = _REGISTRY[name].oracle
+    named = tuple(t for t in TABLES if re.search(rf"\b{t}\b", text))
+    register_views(spark, sf_dir, named)
+    return spark.sql(text)
 
 
 def _remove_scratch(root: str, owner: int) -> None:

@@ -1,11 +1,13 @@
 """Core relational operator coverage (SURVEY.md §2.B: scans, projection,
 filter, joins of every type, aggregation, windows, sort/limit, set ops).
 
-Every query is a lazy DataFrame lineage — scans feed Catalyst directly so
-predicate pushdown / column pruning reach the parquet reader, small
-dimensions are broadcast explicitly, and money aggregates use the exact
-decimal recipe from functions.money (order/partition independent — safe
-on a 1000-executor cluster).
+Most queries are their oracle text run on Spark (``registry.run_sql``);
+the rest are DataFrame lineages where they exercise a DataFrame-only
+surface, an operator, or a plan the text does not reach. Either way scans
+feed Catalyst directly so predicate pushdown / column pruning reach the
+parquet reader, and money aggregates use the exact decimal recipe from
+functions.money (order/partition independent — safe on a 1000-executor
+cluster).
 """
 
 from __future__ import annotations
@@ -17,19 +19,13 @@ from finance_etl_spark.functions.money import (
     cents,
     dsum,
     dsum_cents,
-    lsum,
     o_davg,
     o_dsum,
     o_lsum,
 )
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.recipes import (
-    DAILY_Q6_SQL,
-    SEG_DAILY_SQL,
-    daily_q6,
-    seg_daily,
-)
-from finance_etl_spark.plans.registry import register, scratch_dir
+from finance_etl_spark.plans.recipes import DAILY_Q6_SQL, SEG_DAILY_SQL, daily_q6
+from finance_etl_spark.plans.registry import register, run_sql, scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -140,13 +136,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compound predicate pushdown: IN + BETWEEN + LIKE + NOT."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.filter(
-        F.col("o_orderstatus").isin("O", "F")
-        & F.col("o_totalprice").between(100000, 200000)
-        & (F.col("o_orderpriority").like("1%") | F.col("o_orderpriority").like("2%"))
-        & ~(F.col("o_custkey") == 42)
-    ).select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+    return run_sql(spark, sf_dir, "filter_predicates")
 
 
 @register(
@@ -162,13 +152,7 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality (<=>) over an injected-null column."""
-    c = load_table(spark, sf_dir, "customer")
-    seg_or_null = F.nullif(F.col("c_mktsegment"), F.lit("BUILDING"))
-    return c.filter(F.col("c_custkey") <= 100).select(
-        "c_custkey",
-        seg_or_null.alias("seg_or_null"),
-        seg_or_null.eqNullSafe(F.lit(None).cast("string")).alias("is_building"),
-    )
+    return run_sql(spark, sf_dir, "filter_null_safe_eq")
 
 
 # ---------------------------------------------------------------------------
@@ -211,13 +195,7 @@ def join_inner_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join preserving order-less customers (count = 0)."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return (
-        c.join(o, o.o_custkey == c.c_custkey, "left")
-        .groupBy("c_custkey", "c_mktsegment")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
+    return run_sql(spark, sf_dir, "join_left_outer")
 
 
 @register(
@@ -234,15 +212,7 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join of two pre-aggregated sides (nulls on both)."""
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    cc = c.groupBy(F.col("c_nationkey").alias("nk")).agg(F.count(F.lit(1)).alias("n_cust"))
-    ss = s.groupBy(F.col("s_nationkey").alias("nk")).agg(F.count(F.lit(1)).alias("n_supp"))
-    return cc.join(ss, "nk", "full_outer").select(
-        F.coalesce(cc.nk, ss.nk).alias("nationkey"),
-        F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-        F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-    )
+    return run_sql(spark, sf_dir, "join_full_outer")
 
 
 @register(
@@ -256,9 +226,7 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left semi join (EXISTS): customers with a >400k order."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    c = load_table(spark, sf_dir, "customer")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
+    return run_sql(spark, sf_dir, "join_left_semi")
 
 
 @register(
@@ -275,11 +243,7 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same primitive as the reference's incremental dedup
     (reference: utils/data_manager.py:185-195).
     """
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_mktsegment"
-    )
+    return run_sql(spark, sf_dir, "join_left_anti")
 
 
 @register(
@@ -325,9 +289,7 @@ def join_broadcast_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product of two small dims (125 rows)."""
-    r = load_table(spark, sf_dir, "region").select("r_name")
-    n = load_table(spark, sf_dir, "nation").select("n_name")
-    return r.crossJoin(n)
+    return run_sql(spark, sf_dir, "join_cross")
 
 
 @register(
@@ -347,19 +309,13 @@ def join_theta_non_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly the supported contract for theta joins. SCALE
     CONTRACT (documented exemption from the no-SF-scaling-broadcast
     rule): an arbitrary theta join has no shuffle strategy — BNLJ
-    requires a broadcast side by construction, so the hint here
-    DESIGNATES the smaller relation rather than overriding a shuffle
-    alternative; when neither side is broadcastable the operator must
-    be rewritten (for this accumulating-comparison shape: the
-    bucket+carry ECDF join, the house stat_ks_two_sample pattern).
+    requires a broadcast side by construction, and the planner picks
+    the smaller relation (supplier) by its size, with no shuffle
+    alternative to override; when neither side is broadcastable the
+    operator must be rewritten (for this accumulating-comparison shape:
+    the bucket+carry ECDF join, the house stat_ks_two_sample pattern).
     """
-    s = load_table(spark, sf_dir, "supplier")
-    c = load_table(spark, sf_dir, "customer")
-    return (
-        c.join(F.broadcast(s), c.c_acctbal > s.s_acctbal)
-        .groupBy("s_suppkey")
-        .agg(F.count(F.lit(1)).alias("n_richer_customers"))
-    )
+    return run_sql(spark, sf_dir, "join_theta_non_equi")
 
 
 # ---------------------------------------------------------------------------
@@ -377,11 +333,7 @@ def join_theta_non_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct aggregation (expand+two-phase under AQE)."""
-    c = load_table(spark, sf_dir, "customer")
-    return c.groupBy("c_mktsegment").agg(
-        F.countDistinct("c_nationkey").alias("n_nations"),
-        F.count(F.lit(1)).alias("n_customers"),
-    )
+    return run_sql(spark, sf_dir, "agg_count_distinct")
 
 
 @register(
@@ -396,10 +348,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (flag, flag+status, grand total)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity").alias("sum_qty"), F.count(F.lit(1)).alias("n")
-    )
+    return run_sql(spark, sf_dir, "agg_rollup")
 
 
 @register(
@@ -414,10 +363,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all grouping-set combinations."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        dsum("l_extendedprice").alias("sum_price")
-    )
+    return run_sql(spark, sf_dir, "agg_cube")
 
 
 _GROUPING_SETS_SQL = """
@@ -434,8 +380,7 @@ _GROUPING_SETS_SQL = """
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL API."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_GROUPING_SETS_SQL)
+    return run_sql(spark, sf_dir, "agg_grouping_sets")
 
 
 @register(
@@ -518,18 +463,7 @@ def window_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grouping key so every task handles one nation's suppliers —
     no single-task global sort (the global-ranking case is covered by
     window_global_row_number via the two-pass operator)."""
-    s = load_table(spark, sf_dir, "supplier")
-    w = Window.partitionBy("s_nationkey").orderBy(
-        F.col("s_acctbal").desc(), F.col("s_suppkey")
-    )
-    return s.select(
-        "s_suppkey",
-        "s_nationkey",
-        "s_acctbal",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(3).over(w).alias("bucket"),
-    )
+    return run_sql(spark, sf_dir, "window_rank_dense_ntile")
 
 
 @register(
@@ -637,18 +571,7 @@ def window_lag_lead_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame: count of same-customer orders within ±10k price."""
-    o = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_totalprice")
-        .rangeBetween(-10000, 10000)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.count(F.lit(1)).over(w).alias("n_similar"),
-    )
+    return run_sql(spark, sf_dir, "window_range_frame")
 
 
 @register(
@@ -665,14 +588,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first/last order per customer over a full-partition frame."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return o.select(
-        "o_custkey",
-        F.first("o_orderkey").over(w).alias("first_order"),
-        F.last("o_orderkey").over(wfull).alias("last_order"),
-    ).distinct()
+    return run_sql(spark, sf_dir, "window_first_last")
 
 
 # ---------------------------------------------------------------------------
@@ -691,12 +607,7 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sort_limit_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-N: Spark plans TakeOrderedAndProject — no full sort,
     each partition keeps N rows, the driver merges (scale-safe)."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice", "o_orderdate")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(20)
-    )
+    return run_sql(spark, sf_dir, "sort_limit_topn")
 
 
 @register(
@@ -711,12 +622,7 @@ def sort_limit_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sort_multi_key_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort with explicit NULLS FIRST placement."""
-    c = load_table(spark, sf_dir, "customer")
-    return (
-        c.filter(F.col("c_custkey") <= 50)
-        .select("c_custkey", F.nullif("c_mktsegment", F.lit("MACHINERY")).alias("seg"))
-        .orderBy(F.col("seg").asc_nulls_first(), F.col("c_custkey").desc())
-    )
+    return run_sql(spark, sf_dir, "sort_multi_key_nulls")
 
 
 @register(
@@ -730,10 +636,7 @@ def sort_multi_key_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (bag semantics, duplicates preserved)."""
-    o = load_table(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    b = o.filter(F.col("o_totalprice") > 300000).select(F.col("o_custkey").alias("custkey"))
-    return a.unionByName(b)
+    return run_sql(spark, sf_dir, "set_union_all")
 
 
 @register(
@@ -749,10 +652,7 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (set semantics): one hash-dedup shuffle over the combined
     branches — Spark plans the distinct as a partial+final aggregate,
     so duplicates collapse map-side before the exchange."""
-    o = load_table(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    b = o.filter(F.col("o_totalprice") > 300000).select(F.col("o_custkey").alias("custkey"))
-    return a.unionByName(b).distinct()
+    return run_sql(spark, sf_dir, "set_union_distinct")
 
 
 @register(
@@ -766,10 +666,7 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct): customers active in both years."""
-    o = load_table(spark, sf_dir, "orders")
-    a = o.filter(F.year("o_orderdate") == 1995).select(F.col("o_custkey").alias("custkey"))
-    b = o.filter(F.year("o_orderdate") == 1996).select(F.col("o_custkey").alias("custkey"))
-    return a.intersect(b)
+    return run_sql(spark, sf_dir, "set_intersect")
 
 
 @register(
@@ -783,12 +680,7 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct): customers active in 1995 but not 1996."""
-    o = load_table(spark, sf_dir, "orders")
-    a = o.filter(F.year("o_orderdate") == 1995).select(F.col("o_custkey").alias("custkey"))
-    b = o.filter(F.year("o_orderdate") == 1996).select(F.col("o_custkey").alias("custkey"))
-    # subtract == EXCEPT DISTINCT. (exceptAll(b).distinct() is NOT the
-    # same: it keeps keys whose multiplicity in a exceeds that in b.)
-    return a.subtract(b)
+    return run_sql(spark, sf_dir, "set_except")
 
 
 @register(
@@ -798,8 +690,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT projection (hash-dedup of the key pair)."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select("o_orderstatus", "o_orderpriority").distinct()
+    return run_sql(spark, sf_dir, "distinct_rows")
 
 
 # ---------------------------------------------------------------------------
@@ -819,9 +710,7 @@ _SUBQUERY_IN_SQL = """
 )
 def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN subquery (planned as a left-semi join by Catalyst)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_SUBQUERY_IN_SQL)
+    return run_sql(spark, sf_dir, "subquery_in")
 
 
 @register(
@@ -1226,20 +1115,7 @@ def scalar_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower() rewrites in the query logic (the oracle lowers explicitly
     because DuckDB 1.0 lacks per-expression collation). Collation is an
     expression property, so comparisons stay JVM-codegen'd."""
-    p = load_table(spark, sf_dir, "part").withColumn(
-        "p_type",
-        F.when(F.col("p_partkey") % 2 == 0, F.upper("p_type")).otherwise(
-            F.col("p_type")
-        ),
-    )
-    ci = lambda c: F.collate(F.col(c), "UTF8_LCASE")
-    return p.agg(
-        F.countDistinct("p_type").alias("n_types_cs"),
-        F.countDistinct(ci("p_type")).alias("n_types_ci"),
-        F.count(F.when(ci("p_brand") == F.lit("brand#13"), 1)).alias(
-            "n_brand13_ci"
-        ),
-    )
+    return run_sql(spark, sf_dir, "scalar_collation_ci")
 
 
 _EXISTS_CORRELATED_SQL = """
@@ -1266,9 +1142,7 @@ def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a left-semi and a left-anti hash join on c_custkey — never a
     per-row subquery execution. Expressed in SQL to exercise the
     parser/analyzer path end-to-end."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_EXISTS_CORRELATED_SQL)
+    return run_sql(spark, sf_dir, "subquery_exists_correlated")
 
 
 _LATERAL_TOPK_SQL = """
@@ -1292,9 +1166,7 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     window_topk_per_group but arrived at through the SQL surface, so
     the optimizer (not the author) removes the O(nations × scan)
     naive execution. Unique c_custkey tiebreak keeps top-2 exact."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_LATERAL_TOPK_SQL)
+    return run_sql(spark, sf_dir, "sql_lateral_topk")
 
 
 @register(
@@ -1339,11 +1211,11 @@ def join_salted_hot_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH s AS (
             SELECT l_returnflag,
                    COUNT(*) AS n,
-                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy
+                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sxy,
+                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS syy
             FROM lineitem GROUP BY l_returnflag
         )
         SELECT l_returnflag, CAST(n AS BIGINT) AS n,
@@ -1361,23 +1233,7 @@ def agg_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in corr whose streaming co-moment accumulation is
     order-dependent in float. Same single-pass hash-agg plan shape as
     the built-in — the partials are just as mergeable at 100 TB."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(12,2)")
-    y = F.col("l_extendedprice").cast("decimal(12,2)")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-        F.sum(y * y).cast("double").alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    corr = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.sqrt(n * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * F.sqrt(n * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
-    return s.select("l_returnflag", "n", corr.alias("corr_qty_price"))
+    return run_sql(spark, sf_dir, "agg_corr_exact")
 
 
 @register(
@@ -1682,19 +1538,7 @@ def agg_histogram_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality = O(value range / width), independent of row count.
     The per-bucket min/max double as the bucket's observed bounds for
     profiling UIs."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(
-            F.floor(F.col("o_totalprice") / F.lit(25000.0))
-            .cast("long")
-            .alias("bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("o_totalprice").alias("min_price"),
-            F.max("o_totalprice").alias("max_price"),
-        )
-    )
+    return run_sql(spark, sf_dir, "agg_histogram_bucket")
 
 
 @register(
@@ -1711,10 +1555,7 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(0, multiplicity_1995 − multiplicity_1996) times. Spark plans
     exceptAll as a tagged union + per-key count aggregate + generate —
     one shuffle on the key, never a join of the two sides."""
-    o = load_table(spark, sf_dir, "orders")
-    a = o.filter(F.year("o_orderdate") == 1995).select(F.col("o_custkey").alias("custkey"))
-    b = o.filter(F.year("o_orderdate") == 1996).select(F.col("o_custkey").alias("custkey"))
-    return a.exceptAll(b)
+    return run_sql(spark, sf_dir, "set_except_all")
 
 
 @register(
@@ -1730,10 +1571,7 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL (bag intersection): each key kept
     min(multiplicity_1995, multiplicity_1996) times — the multiplicity
     contract ANSI specifies and `intersect()` (distinct) erases."""
-    o = load_table(spark, sf_dir, "orders")
-    a = o.filter(F.year("o_orderdate") == 1995).select(F.col("o_custkey").alias("custkey"))
-    b = o.filter(F.year("o_orderdate") == 1996).select(F.col("o_custkey").alias("custkey"))
-    return a.intersectAll(b)
+    return run_sql(spark, sf_dir, "set_intersect_all")
 
 
 @register(
@@ -1855,17 +1693,7 @@ def q16_supplier_part_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-stage Expand aggregate — dedup happens partition-local on
     (group, suppkey) before the group-level count, so no group ever
     materializes its full supplier list."""
-    p = (
-        load_table(spark, sf_dir, "part")
-        .filter((F.col("p_brand") != "BRAND_1") & F.col("p_size").isin(1, 5, 9, 13))
-        .select("p_partkey", "p_type", "p_size")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy("p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-    )
+    return run_sql(spark, sf_dir, "q16_supplier_part_types")
 
 
 @register(
@@ -1922,21 +1750,7 @@ def agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group, value) counts, then max_by over a (count, reversed-value)
     struct — the second agg's input is already one row per distinct
     value, and no window sort is needed."""
-    o = load_table(spark, sf_dir, "orders")
-    counts = o.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    # struct ordering: higher count first; on ties the LOWER string must
-    # win, so order by a descending-comparable surrogate of the value —
-    # max_by over (n, negated-rank) is not expressible for strings, so
-    # use min_by over (-n, value): lexicographic struct comparison gives
-    # smallest (-n) = largest n, then smallest value.
-    return counts.groupBy("o_orderstatus").agg(
-        F.min_by(
-            F.col("o_orderpriority"), F.struct((-F.col("n")).alias("neg"), F.col("o_orderpriority"))
-        ).alias("value_mode"),
-        F.max("n").alias("n_occurrences"),
-    )
+    return run_sql(spark, sf_dir, "agg_mode_deterministic")
 
 
 @register(
@@ -1992,7 +1806,7 @@ def window_pct_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dq_benford_digits",
     tags=("curation", "quality", "stats"),
     oracle="""
-        SELECT substr(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR), 1, 1)
+        SELECT substr(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS STRING), 1, 1)
                    AS lead_digit,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(COUNT(*) AS DOUBLE)
@@ -2011,22 +1825,7 @@ def dq_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure codegen'd projection; output is 9 rows regardless of volume.
     The expected-vs-observed comparison is left to the caller since
     log10 expectations are transcendental (rows-only territory)."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
-    total = o.agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        o.groupBy(
-            F.substring(
-                F.col("o_totalprice").cast("decimal(18,2)").cast("string"), 1, 1
-            ).alias("lead_digit")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .crossJoin(F.broadcast(total))
-        .select(
-            "lead_digit",
-            "n",
-            (F.col("n").cast("double") / F.col("n_total")).alias("observed_frac"),
-        )
-    )
+    return run_sql(spark, sf_dir, "dq_benford_digits")
 
 
 @register(
@@ -2047,12 +1846,7 @@ def agg_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative, so partial aggregation merges map-side like any sum,
     and XOR doubles as a cheap membership-diff primitive (two equal
     multisets xor to the same value)."""
-    e = load_table(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.bit_and("event_id").alias("all_and"),
-        F.bit_or("event_id").alias("any_or"),
-        F.bit_xor("event_id").alias("parity_xor"),
-    )
+    return run_sql(spark, sf_dir, "agg_bitwise")
 
 
 @register(
@@ -2073,12 +1867,7 @@ def agg_boolean_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
     existential quantifiers as aggregates — short-circuitable,
     partial-merge-friendly) and COUNT_IF, the three predicates every
     data-quality report wants without a CASE-WHEN forest."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
-        F.bool_and(F.col("o_totalprice") > 1000).alias("all_over_1k"),
-        F.bool_or(F.col("o_totalprice") > 400000).alias("any_over_400k"),
-        F.count_if(F.col("o_orderpriority") == "URGENT").alias("n_urgent"),
-    )
+    return run_sql(spark, sf_dir, "agg_boolean_logic")
 
 
 _ABOVE_OWN_AVG_FROM_SQL = """
@@ -2170,16 +1959,7 @@ def scalar_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     under EITHER ansi setting, which is what a library must use since
     it doesn't own the session config. The oracle spells the same
     contract with NULLIF."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
-    return o.select(
-        "o_orderkey",
-        F.try_divide(F.col("o_totalprice"), F.col("o_orderkey") % 7).alias(
-            "safe_ratio"
-        ),
-        F.when(F.col("o_orderkey") % 7 == 0, F.lit(None).cast("long"))
-        .otherwise(F.lit(1).cast("long"))
-        .alias("divisor_ok"),
-    )
+    return run_sql(spark, sf_dir, "scalar_try_arithmetic")
 
 
 @register(
@@ -2574,10 +2354,10 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH s AS (
             SELECT l_returnflag,
                    COUNT(*) AS n,
-                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx
+                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sxy,
+                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS sxx
             FROM lineitem GROUP BY l_returnflag
         )
         SELECT l_returnflag, CAST(n AS BIGINT) AS n,
@@ -2595,24 +2375,7 @@ def agg_regr_slope_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not. One hash agg (mergeable partials), then slope and
     intercept as single IEEE double expressions on the driver-scale
     group rows."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(12,2)")
-    y = F.col("l_extendedprice").cast("decimal(12,2)")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        n * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    intercept = (F.col("sy") - slope * F.col("sx")) / n
-    return s.select(
-        "l_returnflag", "n", slope.alias("slope"), intercept.alias("intercept")
-    )
+    return run_sql(spark, sf_dir, "agg_regr_slope_exact")
 
 
 @register(
@@ -2622,10 +2385,10 @@ def agg_regr_slope_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH s AS (
             SELECT l_returnflag,
                    COUNT(*) AS n,
-                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4))) AS VARCHAR) AS DOUBLE) AS s1,
-                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4))) AS VARCHAR) AS DOUBLE) AS s2,
-                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4))) AS VARCHAR) AS DOUBLE) AS s3,
-                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4))) AS VARCHAR) AS DOUBLE) AS s4
+                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4))) AS STRING) AS DOUBLE) AS s1,
+                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4))) AS STRING) AS DOUBLE) AS s2,
+                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4))) AS STRING) AS DOUBLE) AS s3,
+                   CAST(CAST(SUM(CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4)) * CAST(l_discount AS DECIMAL(8,4))) AS STRING) AS DOUBLE) AS s4
             FROM lineitem GROUP BY l_returnflag
         )
         SELECT l_returnflag, CAST(n AS BIGINT) AS n,
@@ -2649,31 +2412,7 @@ def agg_skew_kurtosis_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     not. The σ³ normalizer is written var·sqrt(var) (IEEE-exact ops)
     on both sides — pow(var, 1.5) routes through libm and diverges by
     1 ulp between engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_discount").cast("decimal(8,4)")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("s1"),
-        F.sum(x * x).cast("double").alias("s2"),
-        F.sum(x * x * x).cast("double").alias("s3"),
-        F.sum(x * x * x * x).cast("double").alias("s4"),
-    )
-    n = F.col("n").cast("double")
-    m1 = F.col("s1") / n
-    m2 = F.col("s2") / n
-    m3 = F.col("s3") / n
-    m4 = F.col("s4") / n
-    var = m2 - m1 * m1
-    skew = (m3 - 3 * m1 * m2 + 2 * m1 * m1 * m1) / (var * F.sqrt(var))
-    kurt = (m4 - 4 * m1 * m3 + 6 * m1 * m1 * m2 - 3 * m1 * m1 * m1 * m1) / (
-        var * var
-    ) - 3
-    return s.select(
-        "l_returnflag",
-        "n",
-        skew.alias("skewness"),
-        kurt.alias("excess_kurtosis"),
-    )
+    return run_sql(spark, sf_dir, "agg_skew_kurtosis_exact")
 
 
 @register(
@@ -3000,40 +2739,7 @@ def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic with a SMALL, schema-bounded key group, never corpus-
     quadratic; the lift joins run on the |parts|-sized count relation
     and the basket total rides a 1-row broadcast."""
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    n_ord = items.select("l_orderkey").distinct().agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    item_cnt = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c"))
-    a = items.select("l_orderkey", F.col("l_partkey").alias("part_a"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("part_b"))
-    pair_cnt = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("c_ab"))
-        .filter(F.col("c_ab") >= 2)
-    )
-    ca = item_cnt.select(F.col("l_partkey").alias("part_a"), F.col("c").alias("c_a"))
-    cb = item_cnt.select(F.col("l_partkey").alias("part_b"), F.col("c").alias("c_b"))
-    lift = (F.col("n").cast("double") * F.col("c_ab")) / (
-        F.col("c_a").cast("double") * F.col("c_b")
-    )
-    return (
-        pair_cnt.join(ca, "part_a")
-        .join(cb, "part_b")
-        .crossJoin(F.broadcast(n_ord))
-        .select(
-            "part_a", "part_b", "c_ab", "c_a", "c_b",
-            (F.col("c_ab").cast("double") / F.col("c_a")).alias(
-                "confidence_a_to_b"
-            ),
-            lift.alias("lift"),
-        )
-        .orderBy(F.col("c_ab").desc(), "part_a", "part_b")
-        .limit(20)
-    )
+    return run_sql(spark, sf_dir, "agg_market_basket")
 
 
 @register(
@@ -3187,7 +2893,7 @@ def sql_udf_create_function(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM per_val
         )
         SELECT grp AS l_returnflag,
-               CAST(CAST(MIN(x) AS VARCHAR) AS DOUBLE) AS weighted_median,
+               CAST(CAST(MIN(x) AS STRING) AS DOUBLE) AS weighted_median,
                MIN(tw) AS total_weight
         FROM cum WHERE cw * 2 >= tw
         GROUP BY grp
@@ -3206,40 +2912,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket + carry-in decomposition as stat_ks_two_sample applies.
     The argmin-over-threshold is MIN over qualifying rows — no float,
     no interpolation, bit-exact in both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per_val = li.groupBy(
-        F.col("l_returnflag").alias("grp"),
-        F.col("l_extendedprice").cast("decimal(12,2)").alias("x"),
-    ).agg(F.sum(F.col("l_quantity").cast("bigint")).alias("w"))
-    w_cum = (
-        Window.partitionBy("grp")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("grp")
-    cum = per_val.select(
-        "grp",
-        "x",
-        F.sum("w").over(w_cum).alias("cw"),
-        F.sum("w").over(w_tot).alias("tw"),
-    )
-    return (
-        cum.filter(F.col("cw") * 2 >= F.col("tw"))
-        .groupBy("grp")
-        .agg(
-            # VARCHAR-routed DOUBLE at the presentation edge: raw
-            # DECIMAL output columns hash-fail the round driver's
-            # two-path canonicalizer (r7 ingest_fixed_width lesson)
-            F.min("x").cast("string").cast("double").alias("weighted_median"),
-            F.min("tw").alias("total_weight"),
-        )
-        .select(
-            F.col("grp").alias("l_returnflag"),
-            "weighted_median",
-            "total_weight",
-        )
-        .orderBy("l_returnflag")
-    )
+    return run_sql(spark, sf_dir, "agg_weighted_median")
 
 
 @register(
@@ -3448,7 +3121,7 @@ _ENTROPY_COLS = (
                CAST(COUNT(*) AS BIGINT) AS n_distinct,
                -CAST(CAST(SUM(n_v * CAST(ln(CAST(n_v AS DOUBLE)
                        / CAST(n_tot AS DOUBLE))
-                    AS DECIMAL(12,6))) AS VARCHAR) AS DOUBLE)
+                    AS DECIMAL(12,6))) AS STRING) AS DOUBLE)
                  / CAST(SUM(n_v) AS DOUBLE) AS entropy_nats
         FROM (SELECT v, n_v, CAST(SUM(n_v) OVER () AS BIGINT) AS n_tot
               FROM (SELECT {c} AS v, CAST(COUNT(*) AS BIGINT) AS n_v
@@ -3465,37 +3138,7 @@ def dq_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(12,6) and H = −Σ n_v·ln_q(p_v)/N is an exact decimal dot
     product with one edge division. Per column: one value-key
     shuffle, value-cardinality-sized state."""
-    from finance_etl_spark.io.readers import load_table as _lt
-    from pyspark.sql import Window as _W
-
-    parts = []
-    for t, c in _ENTROPY_COLS:
-        counts = (
-            _lt(spark, sf_dir, t)
-            .groupBy(F.col(c).alias("v"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_v"))
-        )
-        tot = _W.partitionBy()
-        lnq = F.log(
-            F.col("n_v").cast("double")
-            / F.sum("n_v").over(tot).cast("double")
-        ).cast("decimal(12,6)")
-        parts.append(
-            counts.select("v", "n_v", (F.col("n_v") * lnq).alias("term"))
-            .agg(
-                F.sum("n_v").cast("bigint").alias("n_rows"),
-                F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-                (
-                    (-F.sum("term")).cast("double")
-                    / F.sum("n_v").cast("double")
-                ).alias("entropy_nats"),
-            )
-            .select(F.lit(f"{t}.{c}").alias("column_name"), "*")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return run_sql(spark, sf_dir, "dq_column_entropy")
 
 
 @register(
@@ -4142,7 +3785,7 @@ def geo_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n_raw,
                CAST(SUM(w_q12) AS BIGINT) AS decayed_count_q12,
                CAST(CAST(SUM(CAST(w_q12 AS DECIMAL(19,0)) * cents)
-                    AS VARCHAR) AS DOUBLE) / 1e14 AS decayed_revenue,
+                    AS STRING) AS DOUBLE) / 1e14 AS decayed_revenue,
                CAST(SUM(w_q12) AS DOUBLE) / 1e12 AS decayed_count
         FROM weighted GROUP BY segment
         ORDER BY segment
@@ -4158,47 +3801,7 @@ def agg_decayed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     — merge-safe across partitions and replayable. Decayed counters
     beat sliding windows at scale because state is one number per
     (group), not a window buffer."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    mx = o.agg(F.max(F.col("o_orderdate").cast("date")).alias("dmax"))
-    lab = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .crossJoin(F.broadcast(mx))
-        .select(
-            F.col("c_mktsegment").alias("segment"),
-            F.datediff(F.col("dmax"), F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("days_ago"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    weighted = lab.select(
-        "segment",
-        F.floor(
-            F.pow(F.lit(0.999), F.col("days_ago").cast("double")) * F.lit(1e12)
-        )
-        .cast("bigint")
-        .alias("w_q12"),
-        "cents",
-    )
-    return (
-        weighted.groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_raw"),
-            F.sum("w_q12").cast("bigint").alias("decayed_count_q12"),
-            (
-                F.sum(F.col("w_q12").cast("decimal(19,0)") * F.col("cents"))
-                .cast("decimal(38,0)")
-                .cast("string")
-                .cast("double")
-                / F.lit(1e14)
-            ).alias("decayed_revenue"),
-            (F.sum("w_q12").cast("double") / F.lit(1e12)).alias("decayed_count"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "agg_decayed_counters")
 
 
 @register(
@@ -4502,37 +4105,7 @@ def window_weighted_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rows without a full 7-day history are NULL on both engines.
     Per-segment calendar-bounded windows; corpus work is the daily
     agg."""
-    daily = seg_daily(spark, sf_dir)
-    cents = daily.select(
-        "segment",
-        "d",
-        (F.col("x").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-    )
-    w = Window.partitionBy("segment").orderBy("d")
-    lagged = cents.select(
-        "segment",
-        "d",
-        "v",
-        *[F.lag("v", k).over(w).alias(f"v{k}") for k in range(1, 7)],
-    )
-    wma_num = (
-        7 * F.col("v")
-        + 6 * F.col("v1")
-        + 5 * F.col("v2")
-        + 4 * F.col("v3")
-        + 3 * F.col("v4")
-        + 2 * F.col("v5")
-        + 1 * F.col("v6")
-    )
-    return lagged.select(
-        "segment",
-        "d",
-        (F.col("v").cast("double") / 100).alias("value"),
-        F.when(
-            F.col("v6").isNotNull(),
-            wma_num.cast("double") / 28 / 100,
-        ).alias("wma7"),
-    ).orderBy("segment", "d")
+    return run_sql(spark, sf_dir, "window_weighted_moving_avg")
 
 
 @register(
@@ -4685,40 +4258,7 @@ def window_dist_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     price via nth_value over the unbounded frame (NOT the default
     running frame — the frame clause is the surface under test). One
     priority-partitioned sort at corpus scale."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_orderpriority").alias("pri"),
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
-        "o_orderkey",
-    )
-    wo = Window.partitionBy("pri").orderBy("cents", "o_orderkey")
-    wfull = wo.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    win = base.select(
-        "pri",
-        F.cume_dist().over(wo).alias("cd"),
-        F.percent_rank().over(wo).alias("pr"),
-        F.nth_value("cents", 3).over(wfull).alias("third_cents"),
-    )
-    return (
-        win.groupBy("pri")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(
-                F.when(
-                    F.col("cd") <= F.lit("0.25").cast("double"), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_lower_quartile"),
-            lsum(F.col("pr")).alias("pr_q6_sum"),
-            F.max("third_cents").cast("bigint").alias("third_lowest_cents"),
-        )
-        .orderBy("pri")
-    )
+    return run_sql(spark, sf_dir, "window_dist_functions")
 
 
 # ---------------------------------------------------------------------------

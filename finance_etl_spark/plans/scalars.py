@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, run_sql
 
 
 @register(
@@ -32,7 +32,7 @@ from finance_etl_spark.plans.registry import register
                regexp_replace(p_name, ' ', '_') AS name_snake,
                split_part(p_type, ' ', 1) AS type_head,
                (p_type LIKE '%BRUSHED%') AS is_brushed,
-               lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_padded,
+               lpad(CAST(p_size AS STRING), 4, '0') AS size_padded,
                reverse(p_brand) AS brand_rev,
                replace(p_brand, '#', '-') AS brand_dash
         FROM part WHERE p_partkey <= 100
@@ -40,23 +40,7 @@ from finance_etl_spark.plans.registry import register
 )
 def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function battery over part."""
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 100)
-    return p.select(
-        "p_partkey",
-        F.upper("p_brand").alias("brand_upper"),
-        F.lower("p_type").alias("type_lower"),
-        F.substring("p_name", 1, 8).alias("name_prefix"),
-        F.trim("p_name").alias("name_trim"),
-        F.length("p_name").alias("name_len"),
-        F.concat(F.col("p_brand"), F.lit(":"), F.col("p_type")).alias("brand_type"),
-        F.regexp_extract("p_type", r"([A-Z]+)", 1).alias("first_word"),
-        F.regexp_replace("p_name", " ", "_").alias("name_snake"),
-        F.split(F.col("p_type"), " ").getItem(0).alias("type_head"),
-        F.col("p_type").like("%BRUSHED%").alias("is_brushed"),
-        F.lpad(F.col("p_size").cast("string"), 4, "0").alias("size_padded"),
-        F.reverse("p_brand").alias("brand_rev"),
-        F.replace(F.col("p_brand"), F.lit("#"), F.lit("-")).alias("brand_dash"),
-    )
+    return run_sql(spark, sf_dir, "scalar_string_funcs")
 
 
 @register(
@@ -71,15 +55,7 @@ def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance pairs among nation names (fuzzy string matching)."""
-    n = load_table(spark, sf_dir, "nation")
-    n1 = n.select(F.col("n_nationkey").alias("k1"), F.col("n_name").alias("a"))
-    n2 = n.select(F.col("n_nationkey").alias("k2"), F.col("n_name").alias("b"))
-    return (
-        n1.join(n2, F.col("k1") < F.col("k2"))
-        .withColumn("edit_dist", F.levenshtein("a", "b"))
-        .filter(F.col("edit_dist") <= 4)
-        .select("a", "b", "edit_dist")
-    )
+    return run_sql(spark, sf_dir, "scalar_levenshtein")
 
 
 @register(
@@ -146,31 +122,7 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math battery (IEEE-exact ops only) over lineitem."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 200)
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        # the product rounds at an exact decimal, not a float: a double
-        # product can land exactly on a .005 boundary where the engines'
-        # round() disagree (binary-value vs shortest-string rounding —
-        # caught at sf0.001); the decimal(25,4) product is exact and
-        # both engines round it half-away-from-zero
-        F.round(
-            F.col("l_extendedprice").cast("decimal(12,2)")
-            * F.col("l_discount").cast("decimal(12,2)"),
-            2,
-        )
-        .cast("double")
-        .alias("disc_amount"),
-        F.abs(F.col("l_quantity") - 25).alias("qty_dev"),
-        F.ceil(F.col("l_extendedprice") / 1000).alias("price_k_ceil"),
-        F.floor(F.col("l_extendedprice") / 1000).alias("price_k_floor"),
-        (F.col("l_orderkey") % 7).alias("key_mod"),
-        F.sqrt("l_quantity").alias("qty_sqrt"),
-        F.signum(F.col("l_discount") - 0.05).alias("disc_sign"),
-        F.greatest("l_tax", "l_discount").alias("max_rate"),
-        F.least("l_tax", "l_discount").alias("min_rate"),
-    )
+    return run_sql(spark, sf_dir, "scalar_math_funcs")
 
 
 @register("math_transcendental", tags=("scalar", "math", "approx"))
@@ -204,21 +156,7 @@ def math_transcendental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """case/when, coalesce, nullif, conditional projection."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 300)
-    return o.select(
-        "o_orderkey",
-        F.when(F.col("o_totalprice") >= 300000, "large")
-        .when(F.col("o_totalprice") >= 100000, "medium")
-        .otherwise("small")
-        .alias("size_bucket"),
-        F.coalesce(F.nullif("o_orderstatus", F.lit("O")), F.lit("OPEN")).alias(
-            "status_label"
-        ),
-        F.nullif("o_orderpriority", F.lit("4-NOT SPECIFIED")).alias("priority_or_null"),
-        F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice")).alias(
-            "finished_price"
-        ),
-    )
+    return run_sql(spark, sf_dir, "scalar_conditional")
 
 
 @register(
@@ -529,7 +467,7 @@ def scalar_string_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
                'shop.example.com' AS host,
                '/seg/' || lower(c_mktsegment) || '/cust' AS path,
                'id=' || c_custkey || '&tier=t' || (c_custkey % 3) AS query,
-               CAST(c_custkey AS VARCHAR) AS q_id,
+               CAST(c_custkey AS STRING) AS q_id,
                't' || (c_custkey % 3) AS q_tier
         FROM customer
     """,
@@ -542,24 +480,7 @@ def scalar_url_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser round-trips the construction exactly — the
     log-processing/web-corpus shape (URL normalization before URL
     dedup) with zero Python in the row path."""
-    c = load_table(spark, sf_dir, "customer")
-    url = F.concat(
-        F.lit("https://shop.example.com/seg/"),
-        F.lower("c_mktsegment"),
-        F.lit("/cust?id="),
-        F.col("c_custkey").cast("string"),
-        F.lit("&tier=t"),
-        (F.col("c_custkey") % 3).cast("string"),
-    )
-    return c.select(
-        "c_custkey",
-        url.alias("url"),
-        F.parse_url(url, F.lit("HOST")).alias("host"),
-        F.parse_url(url, F.lit("PATH")).alias("path"),
-        F.parse_url(url, F.lit("QUERY")).alias("query"),
-        F.parse_url(url, F.lit("QUERY"), F.lit("id")).alias("q_id"),
-        F.parse_url(url, F.lit("QUERY"), F.lit("tier")).alias("q_tier"),
-    )
+    return run_sql(spark, sf_dir, "scalar_url_funcs")
 
 
 @register(
@@ -611,20 +532,7 @@ def scalar_aes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-byte AES blocks — so a Spark-side regression in either
     direction (bad key handling, charset drift) breaks the hash
     match."""
-    c = load_table(spark, sf_dir, "customer")
-    enc = F.expr(
-        "aes_encrypt(c_name, '0123456789abcdef', 'ECB')"
-    )
-    dec = F.expr(
-        "CAST(aes_decrypt(aes_encrypt(c_name, '0123456789abcdef', 'ECB'),"
-        " '0123456789abcdef', 'ECB') AS STRING)"
-    )
-    return c.select(
-        "c_custkey",
-        "c_name",
-        (dec == F.col("c_name")).alias("roundtrip_ok"),
-        F.length(enc).alias("cipher_len"),
-    )
+    return run_sql(spark, sf_dir, "scalar_aes_roundtrip")
 
 
 @register(
@@ -659,25 +567,7 @@ def scalar_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     are JVM catalyst expressions over the map type, zero shuffles
     until the final explode; the oracle is the equivalent relational
     unpivot+filter, proving the map pipeline is just a typed reshape."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
-    m = F.map_from_arrays(
-        F.array(F.lit("qty"), F.lit("price"), F.lit("disc")),
-        F.array(
-            F.col("l_quantity").cast("double"),
-            F.col("l_extendedprice").cast("double"),
-            F.col("l_discount").cast("double"),
-        ),
-    )
-    scaled = F.transform_values(m, lambda k, v: v * 100)
-    pruned = F.map_filter(scaled, lambda k, v: v > 50)
-    return (
-        li.select("l_orderkey", "l_linenumber", pruned.alias("mm"))
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.explode("mm").alias("metric", "value"),
-        )
-    )
+    return run_sql(spark, sf_dir, "scalar_map_functions")
 
 
 @register(

@@ -41,17 +41,14 @@ from finance_etl_spark.plans.recipes import (
     ORDER_PRIORITIES,
     PHI2_CELL_SQL,
     SEG_DAILY_SQL,
-    daily_q6,
     daily_scaled,
-    event_daily,
     midranks2,
     ncdf_sql,
-    phi2_cell,
     pois_case,
     pois_case_sql,
     seg_daily,
 )
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, run_sql
 
 # the two samples under test: order totals of URGENT vs LOW priority
 # orders — same-shaped distributions, so the tests exercise real
@@ -272,8 +269,8 @@ def stat_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH ts AS ({_SAMPLE_SQL}),
         s AS (
             SELECT g, COUNT(*) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(x * x) AS VARCHAR) AS DOUBLE) AS sxx
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(x * x) AS STRING) AS DOUBLE) AS sxx
             FROM ts GROUP BY g
         ),
         w AS (
@@ -313,40 +310,7 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming co-moment path is not. One pass, two output rows fused
     into one via conditional aggregation — no join, no shuffle beyond
     the 2-group agg."""
-    ts = _two_sample(spark, sf_dir)
-    s = ts.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-    )
-    w = s.agg(
-        F.max(F.when(F.col("g") == 1, F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("g") == 0, F.col("n"))).alias("n2"),
-        F.max(F.when(F.col("g") == 1, F.col("sx"))).alias("sx1"),
-        F.max(F.when(F.col("g") == 0, F.col("sx"))).alias("sx2"),
-        F.max(F.when(F.col("g") == 1, F.col("sxx"))).alias("sxx1"),
-        F.max(F.when(F.col("g") == 0, F.col("sxx"))).alias("sxx2"),
-    )
-    n1 = F.col("n1").cast("double")
-    n2 = F.col("n2").cast("double")
-    se1 = (F.col("sxx1") - F.col("sx1") * F.col("sx1") / n1) / (
-        n1 - F.lit(1.0)
-    ) / n1
-    se2 = (F.col("sxx2") - F.col("sx2") * F.col("sx2") / n2) / (
-        n2 - F.lit(1.0)
-    ) / n2
-    tstat = (F.col("sx1") / n1 - F.col("sx2") / n2) / F.sqrt(se1 + se2)
-    dof = (se1 + se2) * (se1 + se2) / (
-        se1 * se1 / (n1 - F.lit(1.0)) + se2 * se2 / (n2 - F.lit(1.0))
-    )
-    return w.select(
-        "n1",
-        "n2",
-        (F.col("sx1") / n1).alias("mean1"),
-        (F.col("sx2") / n2).alias("mean2"),
-        tstat.alias("t_stat"),
-        dof.alias("welch_df"),
-    )
+    return run_sql(spark, sf_dir, "stat_welch_ttest")
 
 
 # ---------------------------------------------------------------------------
@@ -627,9 +591,6 @@ def stat_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # power sums.
 
 
-
-
-
 @register(
     "stat_spearman_corr",
     tags=("stats", "window", "agg"),
@@ -763,38 +724,7 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe — so the sum over cells is order-independent and the final
     chi2 / V are identical IEEE edges. Corpus-scale work is one
     grouped count; everything else is model-sized."""
-    o = load_table(spark, sf_dir, "orders")
-    cells = o.groupBy(
-        F.col("o_orderpriority").alias("r"),
-        F.col("o_orderstatus").alias("c"),
-    ).agg(F.count(F.lit(1)).alias("o"))
-    wr = Window.partitionBy("r")
-    wc = Window.partitionBy("c")
-    wall = Window.partitionBy()
-    m = cells.select(
-        "r",
-        "c",
-        "o",
-        F.sum("o").over(wr).cast("bigint").alias("nr"),
-        F.sum("o").over(wc).cast("bigint").alias("nc"),
-        F.sum("o").over(wall).cast("bigint").alias("n"),
-    )
-    tots = m.agg(
-        F.max("n").alias("n"),
-        F.countDistinct("r").alias("nrows"),
-        F.countDistinct("c").alias("ncols"),
-        fsum(phi2_cell(), 15).alias("phi2"),
-    )
-    return tots.select(
-        F.col("n").cast("bigint").alias("n"),
-        F.col("nrows").cast("bigint").alias("n_rows"),
-        F.col("ncols").cast("bigint").alias("n_cols"),
-        (F.col("n").cast("double") * F.col("phi2")).alias("chi2"),
-        F.sqrt(
-            F.col("phi2")
-            / F.least(F.col("nrows") - 1, F.col("ncols") - 1).cast("double")
-        ).alias("cramers_v"),
-    )
+    return run_sql(spark, sf_dir, "stat_cramers_v")
 
 
 # ---------------------------------------------------------------------------
@@ -860,62 +790,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(days) rows; O(series) output. Too-few runs = trending, too many
     = mean-reverting — the cheap first screen before fitting AR
     structure (ts_pacf / ts_yule_walker_ar2)."""
-    daily = event_daily(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("d")
-    moves = daily.select(
-        "event_type",
-        "d",
-        F.when(F.col("x") > F.lag("x").over(w), 1)
-        .when(F.col("x") < F.lag("x").over(w), -1)
-        .alias("s"),
-    ).filter(F.col("s").isNotNull())
-    signs = moves.select(
-        "event_type", "s", F.lag("s").over(w).alias("sp")
-    )
-    agg = signs.groupBy("event_type").agg(
-        F.sum(F.when(F.col("s") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_up"),
-        F.sum(F.when(F.col("s") == -1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_down"),
-        (
-            F.lit(1)
-            + F.sum(
-                F.when(
-                    F.col("sp").isNotNull() & (F.col("s") != F.col("sp")), 1
-                ).otherwise(0)
-            )
-        )
-        .cast("bigint")
-        .alias("n_runs"),
-    )
-    nu = F.col("n_up").cast("double")
-    nd = F.col("n_down").cast("double")
-    nt = (F.col("n_up") + F.col("n_down")).cast("double")
-    e_runs = F.lit(2.0) * nu * nd / nt + F.lit(1.0)
-    var = (
-        F.lit(2.0) * nu * nd * (F.lit(2.0) * nu * nd - nt)
-        / (nt * nt * (nt - F.lit(1.0)))
-    )
-    # degenerate guard: a monotone series (n_up or n_down = 0) or a
-    # single move makes var = 0 -> 0/0 NaN, whose handling differs
-    # cross-engine; both sides emit NULL for the undecidable z
-    degenerate = (
-        (F.col("n_up") == 0)
-        | (F.col("n_down") == 0)
-        | ((F.col("n_up") + F.col("n_down")) < 2)
-    )
-    z = (F.col("n_runs").cast("double") - e_runs) / F.sqrt(var)
-    return agg.select(
-        "event_type",
-        "n_up",
-        "n_down",
-        "n_runs",
-        F.when(degenerate, F.lit(None).cast("double"))
-        .otherwise(z)
-        .alias("z_score"),
-    ).orderBy("event_type")
+    return run_sql(spark, sf_dir, "stat_runs_test")
 
 
 # ---------------------------------------------------------------------------
@@ -1681,26 +1556,26 @@ def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM (SELECT CAST(SUM(o) AS BIGINT) AS ncol FROM cells GROUP BY d)
         )
         SELECT m.n,
-               CAST(CAST(p.nc AS VARCHAR) AS DOUBLE) AS n_concordant,
-               CAST(CAST(p.nd AS VARCHAR) AS DOUBLE) AS n_discordant,
-               CAST(CAST(tq.t2 AS VARCHAR) AS DOUBLE) / CAST(2 AS DOUBLE)
+               CAST(CAST(p.nc AS STRING) AS DOUBLE) AS n_concordant,
+               CAST(CAST(p.nd AS STRING) AS DOUBLE) AS n_discordant,
+               CAST(CAST(tq.t2 AS STRING) AS DOUBLE) / CAST(2 AS DOUBLE)
                    AS ties_x,
-               CAST(CAST(td.t2 AS VARCHAR) AS DOUBLE) / CAST(2 AS DOUBLE)
+               CAST(CAST(td.t2 AS STRING) AS DOUBLE) / CAST(2 AS DOUBLE)
                    AS ties_y,
                CASE WHEN m.n * (m.n - 1) / 2
-                         > CAST(CAST(tq.t2 AS VARCHAR) AS DOUBLE) / 2
+                         > CAST(CAST(tq.t2 AS STRING) AS DOUBLE) / 2
                      AND m.n * (m.n - 1) / 2
-                         > CAST(CAST(td.t2 AS VARCHAR) AS DOUBLE) / 2
-               THEN (CAST(CAST(p.nc AS VARCHAR) AS DOUBLE)
-                - CAST(CAST(p.nd AS VARCHAR) AS DOUBLE))
+                         > CAST(CAST(td.t2 AS STRING) AS DOUBLE) / 2
+               THEN (CAST(CAST(p.nc AS STRING) AS DOUBLE)
+                - CAST(CAST(p.nd AS STRING) AS DOUBLE))
                / sqrt(
                    (CAST(m.n AS DOUBLE) * (CAST(m.n AS DOUBLE)
                         - CAST(1 AS DOUBLE)) / CAST(2 AS DOUBLE)
-                    - CAST(CAST(tq.t2 AS VARCHAR) AS DOUBLE)
+                    - CAST(CAST(tq.t2 AS STRING) AS DOUBLE)
                         / CAST(2 AS DOUBLE))
                    * (CAST(m.n AS DOUBLE) * (CAST(m.n AS DOUBLE)
                         - CAST(1 AS DOUBLE)) / CAST(2 AS DOUBLE)
-                    - CAST(CAST(td.t2 AS VARCHAR) AS DOUBLE)
+                    - CAST(CAST(td.t2 AS STRING) AS DOUBLE)
                         / CAST(2 AS DOUBLE))
                ) END AS tau_b
         FROM pairs p, marg m, tq, td
@@ -1718,79 +1593,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     would overflow DuckDB's decimal width) — IEEE-deterministic both
     sides. Pair counts present as DOUBLE: they are ~n^2/4 and outgrow
     BIGINT at petabyte corpus sizes."""
-    li = load_table(spark, sf_dir, "lineitem")
-    cells = (
-        li.select(
-            F.col("l_quantity").cast("decimal(12,2)").alias("q"),
-            F.col("l_discount").cast("decimal(12,2)").alias("d"),
-        )
-        .groupBy("q", "d")
-        .agg(F.count(F.lit(1)).alias("o"))
-    )
-    dec = "decimal(38,0)"
-    c1, c2 = cells.alias("c1"), cells.alias("c2")
-    pairs = (
-        c1.join(F.broadcast(c2), F.col("c2.q") > F.col("c1.q"))
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("c2.d") > F.col("c1.d"),
-                    F.col("c1.o").cast(dec) * F.col("c2.o"),
-                ).otherwise(F.lit(0).cast(dec))
-            )
-            .cast(dec)
-            .alias("nc"),
-            F.sum(
-                F.when(
-                    F.col("c2.d") < F.col("c1.d"),
-                    F.col("c1.o").cast(dec) * F.col("c2.o"),
-                ).otherwise(F.lit(0).cast(dec))
-            )
-            .cast(dec)
-            .alias("nd"),
-        )
-    )
-    marg = cells.agg(F.sum("o").cast("bigint").alias("n"))
-    tq = (
-        cells.groupBy("q")
-        .agg(F.sum("o").cast("bigint").alias("nr"))
-        .agg(
-            F.sum(F.col("nr").cast(dec) * (F.col("nr") - 1)).cast(dec).alias("t2")
-        )
-        .withColumnRenamed("t2", "t2q")
-    )
-    td = (
-        cells.groupBy("d")
-        .agg(F.sum("o").cast("bigint").alias("ncol"))
-        .agg(
-            F.sum(F.col("ncol").cast(dec) * (F.col("ncol") - 1))
-            .cast(dec)
-            .alias("t2d")
-        )
-    )
-    j = (
-        pairs.crossJoin(F.broadcast(marg))
-        .crossJoin(F.broadcast(tq))
-        .crossJoin(F.broadcast(td))
-    )
-    nd_ = F.col("n").cast("double")
-    n0 = nd_ * (nd_ - F.lit(1.0)) / F.lit(2.0)
-    return j.select(
-        "n",
-        as_d(F.col("nc")).alias("n_concordant"),
-        as_d(F.col("nd")).alias("n_discordant"),
-        (as_d(F.col("t2q")) / F.lit(2.0)).alias("ties_x"),
-        (as_d(F.col("t2d")) / F.lit(2.0)).alias("ties_y"),
-        F.when(
-            (n0 > as_d(F.col("t2q")) / F.lit(2.0))
-            & (n0 > as_d(F.col("t2d")) / F.lit(2.0)),
-            (as_d(F.col("nc")) - as_d(F.col("nd")))
-            / F.sqrt(
-                (n0 - as_d(F.col("t2q")) / F.lit(2.0))
-                * (n0 - as_d(F.col("t2d")) / F.lit(2.0))
-            ),
-        ).alias("tau_b"),
-    )
+    return run_sql(spark, sf_dir, "stat_kendall_tau")
 
 
 # ---------------------------------------------------------------------------
@@ -1961,7 +1764,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(SUM(n_obs) AS BIGINT) AS n,
                    CAST(COUNT(*) AS BIGINT) AS k,
                    CAST(CAST(SUM(CAST(n_obs AS DECIMAL(38,0)) * n_obs)
-                        AS VARCHAR) AS DOUBLE) AS so2
+                        AS STRING) AS DOUBLE) AS so2
             FROM per
         )
         SELECT p.dow, p.n_obs,
@@ -1989,37 +1792,7 @@ def stat_chi2_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi2_term doubles are bit-identical shared expressions. Corpus ->
     7 rows in one map-side-combining agg; everything after is
     constant-sized."""
-    o = load_table(spark, sf_dir, "orders")
-    lab = o.select(
-        (
-            F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01"))
-            .cast("bigint")
-            % 7
-        ).alias("dow")
-    )
-    per = lab.groupBy("dow").agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
-    tot = per.agg(
-        F.sum("n_obs").cast("bigint").alias("n"),
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(F.col("n_obs").cast("decimal(38,0)") * F.col("n_obs"))
-        .cast("decimal(38,0)")
-        .cast("string")
-        .cast("double")
-        .alias("so2"),
-    )
-    j = per.crossJoin(F.broadcast(tot))
-    nd_ = F.col("n").cast("double")
-    kd = F.col("k").cast("double")
-    exp_ = nd_ / kd
-    od = F.col("n_obs").cast("double")
-    return j.select(
-        "dow",
-        "n_obs",
-        exp_.alias("expected"),
-        ((od - exp_) * (od - exp_) / exp_).alias("chi2_term"),
-        ((kd * F.col("so2") - nd_ * nd_) / nd_).alias("chi2_total"),
-        (F.col("k") - 1).cast("bigint").alias("df"),
-    ).orderBy("dow")
+    return run_sql(spark, sf_dir, "stat_chi2_gof")
 
 
 # ---------------------------------------------------------------------------
@@ -2032,7 +1805,6 @@ def stat_chi2_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # comparison p_(i) <= i/m * alpha becomes the EXACT integer test
 # 20 * m * p_q9 <= i * 1e9 (alpha = 0.05) — no float comparisons
 # anywhere in the decision path.
-
 
 
 @register(
@@ -2056,7 +1828,7 @@ def stat_chi2_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(COUNT(*) AS BIGINT) AS m,
                    (SELECT CAST(CAST(SUM(CAST(xc AS DECIMAL(19,0))
                                          * CAST(xc AS DECIMAL(19,0)))
-                                AS VARCHAR) AS DOUBLE) FROM lab) AS q
+                                AS STRING) AS DOUBLE) FROM lab) AS q
             FROM per
         ),
         zs AS (
@@ -2108,92 +1880,7 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rnk*1e9), so no cross-engine float comparison can flip a
     discovery. The ROW_NUMBER window is over the 25-row model relation
     — never the corpus."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    lab = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_nationkey").alias("nation"),
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("xc"),
-    )
-    per = lab.groupBy("nation").agg(
-        F.count(F.lit(1)).cast("bigint").alias("nj"),
-        F.sum("xc").cast("bigint").alias("sj"),
-    )
-    tot = per.agg(
-        F.sum("nj").cast("bigint").alias("n"),
-        F.sum("sj").cast("bigint").alias("s"),
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-    ).crossJoin(
-        lab.agg(
-            F.sum(F.col("xc").cast("decimal(19,0)") * F.col("xc").cast("decimal(19,0)"))
-            .cast("decimal(38,0)")
-            .cast("string")
-            .cast("double")
-            .alias("q")
-        )
-    )
-    zs = per.crossJoin(F.broadcast(tot)).select(
-        "nation",
-        "nj",
-        "m",
-        (
-            (
-                F.col("sj").cast("double") / F.col("nj").cast("double")
-                - F.col("s").cast("double") / F.col("n").cast("double")
-            )
-            * F.sqrt(F.col("nj").cast("double"))
-            / F.sqrt(
-                (
-                    F.col("q")
-                    - F.col("s").cast("double")
-                    * F.col("s").cast("double")
-                    / F.col("n").cast("double")
-                )
-                / F.col("n").cast("double")
-            )
-        ).alias("z"),
-    )
-    ps = zs.select(
-        "nation",
-        "nj",
-        "z",
-        "m",
-        F.floor(
-            F.lit(2.0)
-            * (F.lit(1.0) - F.expr(ncdf_sql("abs(z)")))
-            * F.lit(1e9)
-        )
-        .cast("bigint")
-        .alias("p_q9"),
-    )
-    w = Window.orderBy("p_q9", "nation")
-    ranked = ps.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-    cut = ranked.withColumn(
-        "pass_rnk",
-        F.when(
-            F.lit(20) * F.col("m") * F.col("p_q9")
-            <= F.col("rnk") * F.lit(1000000000),
-            F.col("rnk"),
-        ).otherwise(F.lit(0)),
-    )
-    kstar = cut.agg(F.max("pass_rnk").cast("bigint").alias("k_star"))
-    return (
-        cut.crossJoin(F.broadcast(kstar))
-        .select(
-            "nation",
-            "nj",
-            "z",
-            "p_q9",
-            "rnk",
-            "k_star",
-            F.when(F.col("rnk") <= F.col("k_star"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("reject"),
-        )
-        .orderBy("rnk")
-    )
+    return run_sql(spark, sf_dir, "stat_bh_fdr")
 
 
 @register(
@@ -2208,18 +1895,18 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         s AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(z) AS VARCHAR) AS DOUBLE) AS sz,
-                   CAST(CAST(SUM(x*x) AS VARCHAR) AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(y*y) AS VARCHAR) AS DOUBLE) AS syy,
-                   CAST(CAST(SUM(z*z) AS VARCHAR) AS DOUBLE) AS szz,
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(y) AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(z) AS STRING) AS DOUBLE) AS sz,
+                   CAST(CAST(SUM(x*x) AS STRING) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(y*y) AS STRING) AS DOUBLE) AS syy,
+                   CAST(CAST(SUM(z*z) AS STRING) AS DOUBLE) AS szz,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(21,2)) * y)
-                        AS VARCHAR) AS DOUBLE) AS sxy,
+                        AS STRING) AS DOUBLE) AS sxy,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(21,2)) * z)
-                        AS VARCHAR) AS DOUBLE) AS sxz,
+                        AS STRING) AS DOUBLE) AS sxz,
                    CAST(CAST(SUM(CAST(y AS DECIMAL(21,2)) * z)
-                        AS VARCHAR) AS DOUBLE) AS syz
+                        AS STRING) AS DOUBLE) AS syz
             FROM feat
         ),
         r AS (
@@ -2248,52 +1935,7 @@ def stat_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared double expression — the building block of Gaussian
     graphical-model edge tests at any scale (the scan is the only
     corpus-sized work)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    feat = li.select(
-        F.col("l_quantity").cast("decimal(20,2)").alias("x"),
-        F.col("l_extendedprice").cast("decimal(20,2)").alias("y"),
-        F.col("l_discount").cast("decimal(20,2)").alias("z"),
-    )
-    wide = lambda c: F.col(c).cast("decimal(21,2)")  # noqa: E731
-    s = feat.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum("x")).alias("sx"),
-        as_d(F.sum("y")).alias("sy"),
-        as_d(F.sum("z")).alias("sz"),
-        as_d(F.sum(F.col("x") * F.col("x"))).alias("sxx"),
-        as_d(F.sum(F.col("y") * F.col("y"))).alias("syy"),
-        as_d(F.sum(F.col("z") * F.col("z"))).alias("szz"),
-        as_d(F.sum(wide("x") * F.col("y"))).alias("sxy"),
-        as_d(F.sum(wide("x") * F.col("z"))).alias("sxz"),
-        as_d(F.sum(wide("y") * F.col("z"))).alias("syz"),
-    )
-    nd_ = F.col("n").cast("double")
-    def corr(sab, sa, sb, saa, sbb):
-        return (nd_ * F.col(sab) - F.col(sa) * F.col(sb)) / (
-            F.sqrt(nd_ * F.col(saa) - F.col(sa) * F.col(sa))
-            * F.sqrt(nd_ * F.col(sbb) - F.col(sb) * F.col(sb))
-        )
-    r = s.select(
-        "n",
-        corr("sxy", "sx", "sy", "sxx", "syy").alias("rxy"),
-        corr("sxz", "sx", "sz", "sxx", "szz").alias("rxz"),
-        corr("syz", "sy", "sz", "syy", "szz").alias("ryz"),
-    )
-    return r.select(
-        "n",
-        "rxy",
-        "rxz",
-        "ryz",
-        F.when(
-            (1 - F.col("rxz") * F.col("rxz") > 0)
-            & (1 - F.col("ryz") * F.col("ryz") > 0),
-            (F.col("rxy") - F.col("rxz") * F.col("ryz"))
-            / (
-                F.sqrt(1 - F.col("rxz") * F.col("rxz"))
-                * F.sqrt(1 - F.col("ryz") * F.col("ryz"))
-            ),
-        ).alias("partial_rxy_given_z"),
-    )
+    return run_sql(spark, sf_dir, "stat_partial_corr")
 
 
 @register(
@@ -2600,11 +2242,11 @@ def stat_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(n_orders) AS BIGINT) AS sx,
                    CAST(SUM(rev_cents) AS BIGINT) AS sy,
                    CAST(CAST(SUM(CAST(n_orders AS DECIMAL(19,0)) * n_orders)
-                        AS VARCHAR) AS DOUBLE) AS sxx,
+                        AS STRING) AS DOUBLE) AS sxx,
                    CAST(CAST(SUM(CAST(n_orders AS DECIMAL(19,0)) * rev_cents)
-                        AS VARCHAR) AS DOUBLE) AS sxy,
+                        AS STRING) AS DOUBLE) AS sxy,
                    CAST(CAST(SUM(CAST(rev_cents AS DECIMAL(19,0)) * rev_cents)
-                        AS VARCHAR) AS DOUBLE) AS syy
+                        AS STRING) AS DOUBLE) AS syy
             FROM per_cust
         )
         SELECT n,
@@ -2634,47 +2276,7 @@ def stat_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching Spark's var_x column — because ((R*R)*A)/(n-1) rounds one
     ULP differently on real data (caught by the sf0.1 sweep, round
     11)."""
-    o = load_table(spark, sf_dir, "orders")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.sum((F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("rev_cents"),
-    )
-    s = per_cust.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("n_orders").cast("bigint").alias("sx"),
-        F.sum("rev_cents").cast("bigint").alias("sy"),
-        as_d(
-            F.sum(F.col("n_orders").cast("decimal(19,0)") * F.col("n_orders")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("sxx"),
-        as_d(
-            F.sum(F.col("n_orders").cast("decimal(19,0)") * F.col("rev_cents")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("sxy"),
-        as_d(
-            F.sum(F.col("rev_cents").cast("decimal(19,0)") * F.col("rev_cents")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("syy"),
-    )
-    nd_ = F.col("n").cast("double")
-    R = F.col("sy").cast("double") / F.col("sx").cast("double")
-    var_y = (F.col("syy") - F.col("sy").cast("double") * F.col("sy") / nd_) / (nd_ - 1)
-    var_x = (F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / nd_) / (nd_ - 1)
-    cov = (F.col("sxy") - F.col("sx").cast("double") * F.col("sy") / nd_) / (nd_ - 1)
-    return s.select(
-        "n",
-        (R / F.lit(100.0)).alias("revenue_per_order"),
-        (
-            F.sqrt((var_y + R * R * var_x - 2 * R * cov) / nd_)
-            / (F.col("sx").cast("double") / nd_)
-            / F.lit(100.0)
-        ).alias("se_delta_method"),
-    )
+    return run_sql(spark, sf_dir, "stat_ratio_delta_method")
 
 
 @register(
@@ -2717,33 +2319,7 @@ def stat_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast-join scan; the interval is a single shared double
     expression with the z=1.96 quantile pinned as an exact literal
     (no inverse-CDF call to diverge cross-engine)."""
-    Z = 1.9599639845400545
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    per = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
-            .cast("bigint")
-            .alias("k"),
-        )
-    )
-    nd_ = F.col("n").cast("double")
-    p = F.col("k").cast("double") / nd_
-    z2 = F.lit(Z) * F.lit(Z)
-    center = p + z2 / (2 * nd_)
-    half = F.lit(Z) * F.sqrt(p * (1 - p) / nd_ + z2 / (4 * nd_ * nd_))
-    denom = 1 + z2 / nd_
-    return per.select(
-        "segment",
-        "n",
-        "k",
-        p.alias("p_hat"),
-        ((center - half) / denom).alias("wilson_lo"),
-        ((center + half) / denom).alias("wilson_hi"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "stat_wilson_ci")
 
 
 @register(
@@ -2767,7 +2343,7 @@ def stat_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(diff) AS BIGINT) AS sd_,
                    CAST(CAST(SUM(CAST(diff AS DECIMAL(19,0)) * diff)
-                        AS VARCHAR) AS DOUBLE) AS sdd
+                        AS STRING) AS DOUBLE) AS sdd
             FROM d
         )
         SELECT n,
@@ -2790,40 +2366,7 @@ def stat_ttest_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate. The pairing-by-entity shape (difference first, then
     one-sample t) is what removes the between-customer variance that
     an unpaired test would drown in."""
-    o = load_table(spark, sf_dir, "orders")
-    cutoff = F.lit("1996-01-01").cast("timestamp")
-    cents = (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.when(F.col("o_orderdate") < cutoff, cents).otherwise(0))
-        .cast("bigint")
-        .alias("pre"),
-        F.sum(F.when(F.col("o_orderdate") >= cutoff, cents).otherwise(0))
-        .cast("bigint")
-        .alias("post"),
-    )
-    d = per_cust.select((F.col("post") - F.col("pre")).alias("diff"))
-    s = d.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("diff").cast("bigint").alias("sd_"),
-        as_d(
-            F.sum(F.col("diff").cast("decimal(19,0)") * F.col("diff")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("sdd"),
-    )
-    nd_ = F.col("n").cast("double")
-    ss = F.col("sdd") - F.col("sd_").cast("double") * F.col("sd_") / nd_
-    sd_diff = F.sqrt(ss / (nd_ - 1))
-    return s.select(
-        "n",
-        (F.col("sd_").cast("double") / nd_ / F.lit(100.0)).alias("mean_diff"),
-        (sd_diff / F.lit(100.0)).alias("sd_diff"),
-        F.when(
-            ss > 0,
-            (F.col("sd_").cast("double") / nd_) / (sd_diff / F.sqrt(nd_)),
-        ).alias("t_stat"),
-        (F.col("n") - 1).cast("bigint").alias("df"),
-    )
+    return run_sql(spark, sf_dir, "stat_ttest_paired")
 
 
 # ---------------------------------------------------------------------------
@@ -2880,30 +2423,7 @@ def stat_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     b+c=0 degenerate (no discordant pairs). Never-ordered customers
     enter n00 through the customer-table total, avoiding the
     customer⋈flags join entirely."""
-    o = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    yr = F.year("o_orderdate")
-    flags = o.groupBy("o_custkey").agg(
-        F.max(F.when(yr == 1995, 1).otherwise(0)).alias("f1"),
-        F.max(F.when(yr == 1996, 1).otherwise(0)).alias("f2"),
-    )
-    cells = flags.agg(
-        F.sum(F.col("f1") * F.col("f2")).cast("bigint").alias("n11"),
-        F.sum(F.col("f1") * (F.lit(1) - F.col("f2"))).cast("bigint").alias("b"),
-        F.sum((F.lit(1) - F.col("f1")) * F.col("f2")).cast("bigint").alias("c"),
-    )
-    tot = cust.agg(F.count(F.lit(1)).cast("bigint").alias("nc"))
-    bc = (F.col("b") + F.col("c")).cast("double")
-    d = (F.col("b") - F.col("c")).cast("double")
-    dcc = F.greatest(F.abs(F.col("b") - F.col("c")).cast("double") - 1, F.lit(0.0))
-    return cells.crossJoin(F.broadcast(tot)).select(
-        "n11",
-        "b",
-        "c",
-        (F.col("nc") - F.col("n11") - F.col("b") - F.col("c")).alias("n00"),
-        F.when(F.col("b") + F.col("c") > 0, d * d / bc).alias("chi2"),
-        F.when(F.col("b") + F.col("c") > 0, dcc * dcc / bc).alias("chi2_cc"),
-    )
+    return run_sql(spark, sf_dir, "stat_mcnemar")
 
 
 @register(
@@ -2950,36 +2470,7 @@ def stat_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     class-5 checklist: all-returned / none-returned (p(1-p)=0) and a
     single occupied band (zero score variance) both NULL the z via the
     same CASE on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    bands = li.select(
-        (F.lit(1) + F.floor((F.col("l_quantity") - 1) / 10)).cast("bigint").alias("s"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
-    )
-    suff = bands.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("r"),
-        F.sum(F.col("s") * F.col("y")).cast("bigint").alias("t1"),
-        F.sum("s").cast("bigint").alias("t2"),
-        F.sum(F.col("s") * F.col("s")).cast("bigint").alias("t3"),
-    )
-    n_d = F.col("n").cast("double")
-    r_d = F.col("r").cast("double")
-    t1_d = F.col("t1").cast("double")
-    t2_d = F.col("t2").cast("double")
-    t3_d = F.col("t3").cast("double")
-    svar = t3_d - t2_d * t2_d / n_d
-    p = r_d / n_d
-    return suff.select(
-        "n",
-        "r",
-        "t1",
-        "t2",
-        "t3",
-        F.when(
-            (F.col("r") > 0) & (F.col("r") < F.col("n")) & (svar > 0),
-            (t1_d - r_d * t2_d / n_d) / F.sqrt(p * (1 - p) * svar),
-        ).alias("z_trend"),
-    )
+    return run_sql(spark, sf_dir, "stat_cochran_armitage")
 
 
 @register(
@@ -2990,14 +2481,14 @@ def stat_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT c_mktsegment AS segment,
                    CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS sx,
+                        AS STRING) AS DOUBLE) AS sx,
                    CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))
                                  * CAST(c_acctbal AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS sxx,
+                        AS STRING) AS DOUBLE) AS sxx,
                    CAST(CAST(MIN(CAST(c_acctbal AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS mn,
+                        AS STRING) AS DOUBLE) AS mn,
                    CAST(CAST(MAX(CAST(c_acctbal AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS mx
+                        AS STRING) AS DOUBLE) AS mx
             FROM customer GROUP BY c_mktsegment
         )
         SELECT segment, n,
@@ -3028,29 +2519,7 @@ def stat_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     concern). sd=0 (all-equal group) and n=1 NULL the statistic via
     the same CASE on both engines; decimal sums present through the
     VARCHAR-routed double edge."""
-    cust = load_table(spark, sf_dir, "customer")
-    bal = F.col("c_acctbal").cast("decimal(12,2)")
-    s = cust.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum(bal)).alias("sx"),
-        as_d(F.sum(bal * bal)).alias("sxx"),
-        as_d(F.min(bal)).alias("mn"),
-        as_d(F.max(bal)).alias("mx"),
-    )
-    n_d = F.col("n").cast("double")
-    mean = F.col("sx") / n_d
-    ss = F.col("sxx") - F.col("sx") * F.col("sx") / n_d
-    g = F.greatest(mean - F.col("mn"), F.col("mx") - mean) / F.sqrt(
-        ss / (n_d - 1)
-    )
-    ok = (F.col("n") > 1) & (ss > 0)
-    return s.select(
-        "segment",
-        "n",
-        mean.alias("mean_bal"),
-        F.when(ok, g).alias("g_stat"),
-        F.when(ok, g > 3.0).alias("flagged"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "stat_grubbs_outlier")
 
 
 # ---------------------------------------------------------------------------
@@ -3360,9 +2829,9 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS DECIMAL(38,0)) AS cw
             FROM dd
         )
-        SELECT CAST(CAST(MIN(tot.t) AS VARCHAR) AS DOUBLE) AS n_pairs,
+        SELECT CAST(CAST(MIN(tot.t) AS STRING) AS DOUBLE) AS n_pairs,
                CAST(CAST(MIN(CASE WHEN cum.cw * 2 >= tot.t
-                                  THEN cum.d END) AS VARCHAR) AS DOUBLE)
+                                  THEN cum.d END) AS STRING) AS DOUBLE)
                    AS hl_shift
         FROM cum CROSS JOIN tot
     """,
@@ -3383,41 +2852,7 @@ def stat_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     present as DOUBLE — they are ~n*m and outgrow BIGINT at petabyte
     corpus scale. Class-5: an empty sample empties the cross join and
     both outputs go NULL identically on the two engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity").cast("decimal(12,2)")
-    cx = (
-        li.filter(F.col("l_returnflag") == "R")
-        .groupBy(q.alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    cy = (
-        li.filter(F.col("l_returnflag") != "R")
-        .groupBy(q.alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    dd = (
-        cx.select(F.col("v").alias("vx"), F.col("n").alias("nx"))
-        .crossJoin(
-            F.broadcast(cy.select(F.col("v").alias("vy"), F.col("n").alias("ny")))
-        )
-        .groupBy((F.col("vx") - F.col("vy")).alias("d"))
-        .agg(
-            F.sum(F.col("nx").cast("decimal(19,0)") * F.col("ny"))
-            .cast("decimal(38,0)")
-            .alias("w")
-        )
-    )
-    tot = dd.agg(F.sum("w").cast("decimal(38,0)").alias("t"))
-    wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    cum = dd.select(
-        "d", F.sum("w").over(wcum).cast("decimal(38,0)").alias("cw")
-    )
-    return cum.crossJoin(F.broadcast(tot)).agg(
-        as_d(F.min(F.col("t"))).alias("n_pairs"),
-        as_d(
-            F.min(F.when(F.col("cw") * 2 >= F.col("t"), F.col("d")))
-        ).alias("hl_shift"),
-    )
+    return run_sql(spark, sf_dir, "stat_hodges_lehmann")
 
 
 @register(
@@ -3781,37 +3216,7 @@ def stat_power_two_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan; the formula is one guarded double edge (p1=p2 — nothing
     to detect — NULLs identically). ceil on a double is exact on both
     engines."""
-    o = load_table(spark, sf_dir, "orders")
-    is1 = F.col("o_orderpriority") == "1-URGENT"
-    is2 = F.col("o_orderpriority") == "5-LOW"
-    isf = F.col("o_orderstatus") == "F"
-    p = o.agg(
-        F.sum(is1.cast("int")).cast("bigint").alias("n1"),
-        F.sum((is1 & isf).cast("int")).cast("bigint").alias("x1"),
-        F.sum(is2.cast("int")).cast("bigint").alias("n2"),
-        F.sum((is2 & isf).cast("int")).cast("bigint").alias("x2"),
-    )
-    p1 = F.col("x1").cast("double") / F.col("n1").cast("double")
-    p2 = F.col("x2").cast("double") / F.col("n2").cast("double")
-    pbar = (F.col("x1").cast("double") + F.col("x2").cast("double")) / (
-        F.col("n1").cast("double") + F.col("n2").cast("double")
-    )
-    za = F.lit("1.959963984540054").cast("double")
-    zb = F.lit("0.8416212335729143").cast("double")
-    root = za * F.sqrt(2 * pbar * (1 - pbar)) + zb * F.sqrt(
-        p1 * (1 - p1) + p2 * (1 - p2)
-    )
-    r = p.select(
-        "n1",
-        "n2",
-        p1.alias("p1"),
-        p2.alias("p2"),
-        F.when(
-            p1 != p2,
-            F.ceil(root * root / ((p1 - p2) * (p1 - p2))).cast("bigint"),
-        ).alias("n_per_arm_80pct"),
-    )
-    return r
+    return run_sql(spark, sf_dir, "stat_power_two_prop")
 
 
 @register(
@@ -3823,23 +3228,23 @@ def stat_power_two_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
                         THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                    CAST(CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
                         THEN CAST(o_totalprice AS DECIMAL(12,2))
-                        ELSE CAST(0 AS DECIMAL(12,2)) END) AS VARCHAR)
+                        ELSE CAST(0 AS DECIMAL(12,2)) END) AS STRING)
                         AS DOUBLE) AS s1,
                    CAST(CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
                         THEN CAST(o_totalprice AS DECIMAL(12,2))
                              * CAST(o_totalprice AS DECIMAL(12,2))
-                        ELSE CAST(0 AS DECIMAL(25,4)) END) AS VARCHAR)
+                        ELSE CAST(0 AS DECIMAL(25,4)) END) AS STRING)
                         AS DOUBLE) AS ss1,
                    CAST(SUM(CASE WHEN o_orderpriority = '5-LOW'
                         THEN 1 ELSE 0 END) AS BIGINT) AS n2,
                    CAST(CAST(SUM(CASE WHEN o_orderpriority = '5-LOW'
                         THEN CAST(o_totalprice AS DECIMAL(12,2))
-                        ELSE CAST(0 AS DECIMAL(12,2)) END) AS VARCHAR)
+                        ELSE CAST(0 AS DECIMAL(12,2)) END) AS STRING)
                         AS DOUBLE) AS s2,
                    CAST(CAST(SUM(CASE WHEN o_orderpriority = '5-LOW'
                         THEN CAST(o_totalprice AS DECIMAL(12,2))
                              * CAST(o_totalprice AS DECIMAL(12,2))
-                        ELSE CAST(0 AS DECIMAL(25,4)) END) AS VARCHAR)
+                        ELSE CAST(0 AS DECIMAL(25,4)) END) AS STRING)
                         AS DOUBLE) AS ss2
             FROM orders
         ),
@@ -3880,43 +3285,7 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges; the margin and critical value are string-routed shared
     literals (the NPV decimal-literal lesson). Class-5: se=0 NULLs all
     three outputs identically on both engines."""
-    o = load_table(spark, sf_dir, "orders")
-    p = F.col("o_totalprice").cast("decimal(12,2)")
-    is1 = F.col("o_orderpriority") == "1-URGENT"
-    is2 = F.col("o_orderpriority") == "5-LOW"
-    z0 = F.lit("0").cast("decimal(12,2)")
-    z04 = F.lit("0").cast("decimal(25,4)")
-    s = o.agg(
-        F.sum(is1.cast("int")).cast("bigint").alias("n1"),
-        as_d(F.sum(F.when(is1, p).otherwise(z0))).alias("s1"),
-        as_d(F.sum(F.when(is1, p * p).otherwise(z04))).alias("ss1"),
-        F.sum(is2.cast("int")).cast("bigint").alias("n2"),
-        as_d(F.sum(F.when(is2, p).otherwise(z0))).alias("s2"),
-        as_d(F.sum(F.when(is2, p * p).otherwise(z04))).alias("ss2"),
-    )
-    n1d = F.col("n1").cast("double")
-    n2d = F.col("n2").cast("double")
-    m1 = F.col("s1") / n1d
-    m2 = F.col("s2") / n2d
-    se2 = (F.col("ss1") - F.col("s1") * F.col("s1") / n1d) / (n1d - 1) / n1d + (
-        F.col("ss2") - F.col("s2") * F.col("s2") / n2d
-    ) / (n2d - 1) / n2d
-    delta = F.lit("2000.0").cast("double")
-    zc = F.lit("1.6448536269514722").cast("double")
-    diff = m1 - m2
-    tl = (diff + delta) / F.sqrt(se2)
-    tu = (delta - diff) / F.sqrt(se2)
-    return s.select(
-        "n1",
-        "n2",
-        m1.alias("m1"),
-        m2.alias("m2"),
-        diff.alias("diff"),
-        F.sqrt(se2).alias("se"),
-        F.when(se2 > 0, tl).alias("t_lower"),
-        F.when(se2 > 0, tu).alias("t_upper"),
-        F.when(se2 > 0, (tl > zc) & (tu > zc)).alias("equivalent"),
-    )
+    return run_sql(spark, sf_dir, "stat_tost_equivalence")
 
 
 @register(
@@ -3926,10 +3295,10 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH s AS (
             SELECT o_orderpriority AS g, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS sx,
+                        AS STRING) AS DOUBLE) AS sx,
                    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))
                                  * CAST(o_totalprice AS DECIMAL(12,2)))
-                        AS VARCHAR) AS DOUBLE) AS sxx
+                        AS STRING) AS DOUBLE) AS sxx
             FROM orders GROUP BY o_orderpriority
         ),
         v AS (
@@ -3963,51 +3332,7 @@ def stat_hartley_fmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-group-name tiebreak on exact variance equality, and vmin=0
     (a constant cohort) NULLs the ratio identically on both engines.
     Only k model-sized rows exist after the scan."""
-    o = load_table(spark, sf_dir, "orders")
-    p = F.col("o_totalprice").cast("decimal(12,2)")
-    s = o.groupBy(F.col("o_orderpriority").alias("g")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum(p)).alias("sx"),
-        as_d(F.sum(p * p)).alias("sxx"),
-    )
-    n_d = F.col("n").cast("double")
-    v = s.filter(F.col("n") > 1).select(
-        "g",
-        "n",
-        ((F.col("sxx") - F.col("sx") * F.col("sx") / n_d) / (n_d - 1)).alias(
-            "var"
-        ),
-    )
-    # deterministic extreme-group names: re-join on exact equality
-    vmax_g = (
-        v.crossJoin(F.broadcast(v.agg(F.max("var").alias("vm"))))
-        .filter(F.col("var") == F.col("vm"))
-        .agg(F.min("g").alias("g_max"))
-    )
-    vmin_g = (
-        v.crossJoin(F.broadcast(v.agg(F.min("var").alias("vm"))))
-        .filter(F.col("var") == F.col("vm"))
-        .agg(F.min("g").alias("g_min"))
-    )
-    base = v.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.max("var").alias("vmax"),
-        F.min("var").alias("vmin"),
-    )
-    return (
-        base.crossJoin(F.broadcast(vmax_g))
-        .crossJoin(F.broadcast(vmin_g))
-        .select(
-            "k",
-            "g_max",
-            "g_min",
-            "vmax",
-            "vmin",
-            F.when(F.col("vmin") > 0, F.col("vmax") / F.col("vmin")).alias(
-                "f_max"
-            ),
-        )
-    )
+    return run_sql(spark, sf_dir, "stat_hartley_fmax")
 
 
 # ---------------------------------------------------------------------------
@@ -4032,11 +3357,11 @@ def stat_hartley_fmax(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY d.segment
         )
         SELECT mx.segment, mx.n_days,
-               CAST(CAST(mx.xmax - mx2.xmax2 AS VARCHAR) AS DOUBLE) AS gap,
-               CAST(CAST(mx.xmax - mx.xmin AS VARCHAR) AS DOUBLE) AS xrange,
+               CAST(CAST(mx.xmax - mx2.xmax2 AS STRING) AS DOUBLE) AS gap,
+               CAST(CAST(mx.xmax - mx.xmin AS STRING) AS DOUBLE) AS xrange,
                CASE WHEN mx.xmax > mx.xmin THEN
-                 CAST(CAST(mx.xmax - mx2.xmax2 AS VARCHAR) AS DOUBLE)
-                   / CAST(CAST(mx.xmax - mx.xmin AS VARCHAR) AS DOUBLE)
+                 CAST(CAST(mx.xmax - mx2.xmax2 AS STRING) AS DOUBLE)
+                   / CAST(CAST(mx.xmax - mx.xmin AS STRING) AS DOUBLE)
                END AS q_stat
         FROM mx LEFT JOIN mx2 ON mx2.segment = mx.segment
         ORDER BY mx.segment
@@ -4054,31 +3379,7 @@ def stat_dixon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (range 0) NULL the statistic identically on both engines; a tied
     maximum makes gap 0 (Q = 0), not NULL, matching the order-statistic
     definition. Corpus-scale work is only the daily aggregation."""
-    daily = seg_daily(spark, sf_dir)
-    mx = daily.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.max("x").alias("xmax"),
-        F.min("x").alias("xmin"),
-    )
-    mx2 = (
-        daily.join(F.broadcast(mx.select("segment", "xmax")), "segment")
-        .filter(F.col("x") < F.col("xmax"))
-        .groupBy("segment")
-        .agg(F.max("x").alias("xmax2"))
-    )
-    gap = as_d(F.col("xmax") - F.col("xmax2"))
-    rng = as_d(F.col("xmax") - F.col("xmin"))
-    return (
-        mx.join(mx2, "segment", "left")
-        .select(
-            "segment",
-            "n_days",
-            gap.alias("gap"),
-            rng.alias("xrange"),
-            F.when(F.col("xmax") > F.col("xmin"), gap / rng).alias("q_stat"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "stat_dixon_q")
 
 
 # ---------------------------------------------------------------------------
@@ -4295,41 +3596,7 @@ def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines. Blocks with all-zero rows never enter x and
     cancel from Q algebraically, so the distinct-pair relation is the
     full computation."""
-    e = load_table(spark, sf_dir, "events")
-    x = e.groupBy("user_id", "event_type").agg(F.lit(1).alias("f"))
-    k = e.agg(F.countDistinct("event_type").cast("bigint").alias("k"))
-    cj = x.groupBy("event_type").agg(F.count(F.lit(1)).alias("cj"))
-    cols = cj.agg(
-        F.sum(F.col("cj").cast("decimal(38,0)") * F.col("cj"))
-        .cast("bigint")
-        .alias("sum_cj2"),
-        F.sum("cj").cast("bigint").alias("t"),
-    )
-    ru = x.groupBy("user_id").agg(F.count(F.lit(1)).alias("ru"))
-    rows_ = ru.agg(
-        F.sum(F.col("ru").cast("decimal(38,0)") * F.col("ru"))
-        .cast("bigint")
-        .alias("sum_ru2"),
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-    )
-    kd = F.col("k").cast("double")
-    td = F.col("t").cast("double")
-    return (
-        k.crossJoin(F.broadcast(cols))
-        .crossJoin(F.broadcast(rows_))
-        .select(
-            "k",
-            "n_users",
-            "t",
-            F.when(
-                F.col("k") * F.col("t") - F.col("sum_ru2") > 0,
-                (kd - 1)
-                * (kd * F.col("sum_cj2") - td * F.col("t"))
-                / (kd * F.col("t") - F.col("sum_ru2")),
-            ).alias("q_stat"),
-            (F.col("k") - 1).alias("df"),
-        )
-    )
+    return run_sql(spark, sf_dir, "stat_cochran_q")
 
 
 # ---------------------------------------------------------------------------
@@ -4514,11 +3781,11 @@ _AB_SAMPLE_SQL = """
                CASE WHEN tot.n > 1 AND tot.n1 > 0 AND tot.n0 > 0 THEN
                  (CAST(CAST(CAST(s.ab2 AS DECIMAL(38,0)) * tot.n
                             - CAST(tot.n1 AS DECIMAL(38,0)) * s.sts2
-                        AS VARCHAR) AS DOUBLE) / (2 * CAST(tot.n AS DOUBLE)))
+                        AS STRING) AS DOUBLE) / (2 * CAST(tot.n AS DOUBLE)))
                  / sqrt(CAST(tot.n1 AS DOUBLE) * tot.n0
                         * CAST(CAST(CAST(tot.n AS DECIMAL(38,0)) * s.sts2sq
                                     - s.sts2 * s.sts2
-                               AS VARCHAR) AS DOUBLE)
+                               AS STRING) AS DOUBLE)
                         / (4 * CAST(tot.n AS DOUBLE) * tot.n
                            * (CAST(tot.n AS DOUBLE) - 1)))
                END AS z_stat
@@ -4541,104 +3808,7 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative — no global sort, one distinct-value relation.
     Class-5: z NULLs when either group is empty or N=1 (the fixture's
     priority filter guarantees both populated; guarded anyway)."""
-    cum = _pooled_cumulative_ab(spark, sf_dir)
-    tot = cum.agg(
-        F.sum("a").cast("bigint").alias("n1"),
-        F.sum("b").cast("bigint").alias("n0"),
-        F.sum(F.col("a") + F.col("b")).cast("bigint").alias("n"),
-    )
-    scored = cum.crossJoin(F.broadcast(tot)).select(
-        "a",
-        (F.col("a") + F.col("b")).alias("t"),
-        F.least(
-            2 * F.col("cum_t") - (F.col("a") + F.col("b")) + 1,
-            2 * (F.col("n") + 1)
-            - (2 * F.col("cum_t") - (F.col("a") + F.col("b")) + 1),
-        ).alias("s2"),
-    )
-    s = scored.agg(
-        F.sum(F.col("a") * F.col("s2")).cast("bigint").alias("ab2"),
-        F.sum(F.col("t").cast("decimal(38,0)") * F.col("s2"))
-        .cast("decimal(38,0)")
-        .alias("sts2"),
-        F.sum(F.col("t").cast("decimal(38,0)") * F.col("s2") * F.col("s2"))
-        .cast("decimal(38,0)")
-        .alias("sts2sq"),
-    )
-    n_d = F.col("n").cast("double")
-    num = as_d(
-        F.col("ab2").cast("decimal(38,0)") * F.col("n")
-        - F.col("n1").cast("decimal(38,0)") * F.col("sts2")
-    ) / (2 * n_d)
-    var = (
-        F.col("n1").cast("double")
-        * F.col("n0")
-        * as_d(
-            F.col("n").cast("decimal(38,0)") * F.col("sts2sq")
-            - F.col("sts2") * F.col("sts2")
-        )
-        / (4 * n_d * F.col("n") * (n_d - 1))
-    )
-    return s.crossJoin(F.broadcast(tot)).select(
-        "n1",
-        "n0",
-        (F.col("ab2").cast("double") / 2).alias("ab_stat"),
-        F.when(
-            (F.col("n") > 1) & (F.col("n1") > 0) & (F.col("n0") > 0),
-            num / F.sqrt(var),
-        ).alias("z_stat"),
-    )
-
-
-def _pooled_cumulative_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(x, a, b, cum_a, cum_b, cum_t): URGENT-vs-LOW distinct-price
-    counts with INCLUSIVE per-group and pooled cumulatives, bucket +
-    carry (no corpus-scale unpartitioned window). Shared by the
-    Ansari-Bradley, Anderson-Darling and Brunner-Munzel rank tests."""
-    o = load_table(spark, sf_dir, "orders")
-    ts = o.filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW")).select(
-        F.col("o_totalprice").cast("decimal(12,2)").alias("x"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1)
-        .otherwise(0)
-        .alias("g"),
-    )
-    per_val = ts.groupBy("x").agg(
-        F.sum("g").cast("bigint").alias("a"),
-        F.sum(F.lit(1) - F.col("g")).cast("bigint").alias("b"),
-    )
-    per_val = per_val.withColumn(
-        "bkt", F.floor(F.col("x") / F.lit(10000)).cast("long")
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = per_val.select(
-        "bkt", "x", "a", "b",
-        F.sum("a").over(w_in).alias("wa"),
-        F.sum("b").over(w_in).alias("wb"),
-    )
-    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        per_val.groupBy("bkt")
-        .agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("ta").over(w_carry), F.lit(0)).alias("ca"),
-            F.coalesce(F.sum("tb").over(w_carry), F.lit(0)).alias("cb"),
-        )
-    )
-    return within.join(F.broadcast(carry), "bkt").select(
-        "x",
-        "a",
-        "b",
-        (F.col("wa") + F.col("ca")).alias("cum_a"),
-        (F.col("wb") + F.col("cb")).alias("cum_b"),
-        (F.col("wa") + F.col("ca") + F.col("wb") + F.col("cb")).alias(
-            "cum_t"
-        ),
-    )
+    return run_sql(spark, sf_dir, "stat_ansari_bradley")
 
 
 # ---------------------------------------------------------------------------
@@ -4701,43 +3871,7 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ties, documented approximation). Complete-block guard as in
     stat_friedman_test: unequal block counts NULL the z identically
     on both engines."""
-    daily = daily_scaled(spark, sf_dir)
-    wd = Window.partitionBy("day").orderBy("v")
-    wt = Window.partitionBy("day", "v")
-    ranked = daily.select(
-        "event_type",
-        (2 * F.rank().over(wd) + F.count(F.lit(1)).over(wt) - 1).alias("mr2"),
-    )
-    types = daily.select("event_type").distinct()
-    wj = Window.orderBy("event_type")  # k rows — bounded by type domain
-    tj = types.select("event_type", F.row_number().over(wj).alias("j"))
-    rj = (
-        ranked.join(F.broadcast(tj), "event_type")
-        .groupBy("event_type", "j")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("nb"),
-            F.sum("mr2").cast("bigint").alias("r2j"),
-        )
-    )
-    dims = rj.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.min("nb").cast("bigint").alias("n"),
-        F.max("nb").cast("bigint").alias("mx"),
-        F.sum(F.col("j") * F.col("r2j")).cast("bigint").alias("l2"),
-    )
-    k_d = F.col("k").cast("double")
-    n_d = F.col("n").cast("double")
-    mu = n_d * k_d * (k_d + 1) * (k_d + 1) / 4
-    var = n_d * k_d * k_d * (k_d + 1) * (k_d + 1) * (k_d - 1) / 144
-    return dims.select(
-        "k",
-        "n",
-        (F.col("l2").cast("double") / 2).alias("page_l"),
-        F.when(
-            (F.col("n") == F.col("mx")) & (F.col("k") > 1),
-            (F.col("l2").cast("double") / 2 - mu) / F.sqrt(var),
-        ).alias("z_stat"),
-    )
+    return run_sql(spark, sf_dir, "stat_page_trend")
 
 
 # ---------------------------------------------------------------------------
@@ -4773,7 +3907,7 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        AS DECIMAL(19,0))
                                   * CAST(cum_a * tot.nt - tot.n * cum_t
                                          AS DECIMAL(19,0)) AS DECIMAL(38,0))
-                        AS VARCHAR) AS DOUBLE)
+                        AS STRING) AS DOUBLE)
                      / (CAST(cum_t AS DOUBLE) * (tot.nt - cum_t)) AS ratio
             FROM cum CROSS JOIN tot
             WHERE cum_t < tot.nt
@@ -4803,34 +3937,7 @@ def stat_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, quantization error <= rows*1e-6/(nm)). The B=N top
     row is excluded on both engines (0/0 by construction); n,m >= 1
     by the fixture's priority contract."""
-    cum = _pooled_cumulative_ab(spark, sf_dir)
-    tot = cum.agg(
-        F.sum("a").cast("bigint").alias("n"),
-        F.sum("b").cast("bigint").alias("m"),
-        F.sum(F.col("a") + F.col("b")).cast("bigint").alias("nt"),
-    )
-    gap = (
-        F.col("cum_a") * F.col("nt") - F.col("n") * F.col("cum_t")
-    ).cast("decimal(19,0)")
-    ratio = (
-        (F.col("a") + F.col("b"))
-        * as_d((gap * gap).cast("decimal(38,0)"))
-        / (F.col("cum_t").cast("double") * (F.col("nt") - F.col("cum_t")))
-    )
-    terms = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.col("cum_t") < F.col("nt"))
-        .select(ratio.alias("ratio"))
-    )
-    s = terms.agg(fsum(F.col("ratio")).alias("sq"))
-    return s.crossJoin(F.broadcast(tot)).select(
-        "n",
-        "m",
-        (
-            F.col("sq")
-            / (F.col("n").cast("double") * F.col("m").cast("double"))
-        ).alias("ad_stat"),
-    )
+    return run_sql(spark, sf_dir, "stat_anderson_darling_2s")
 
 
 # ---------------------------------------------------------------------------
@@ -4883,32 +3990,32 @@ def stat_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM dev
         )
         SELECT tot.n1, tot.n0,
-               (CAST(CAST(s.r2sum0 AS VARCHAR) AS DOUBLE)
+               (CAST(CAST(s.r2sum0 AS STRING) AS DOUBLE)
                   / (2 * CAST(tot.n0 AS DOUBLE))
                 - (CAST(tot.n0 AS DOUBLE) + 1) / 2) / tot.n1 AS p_hat,
                CASE WHEN tot.n1 > 1 AND tot.n0 > 1
                          AND (CAST(tot.n1 AS DOUBLE)
                               * (CAST(CAST(s.q1 * tot.n1 - s.s1 * s.s1
-                                      AS VARCHAR) AS DOUBLE)
+                                      AS STRING) AS DOUBLE)
                                  / (4.0 * tot.n1 * (tot.n1 - 1)))
                               + CAST(tot.n0 AS DOUBLE)
                               * (CAST(CAST(s.q0 * tot.n0 - s.s0 * s.s0
-                                      AS VARCHAR) AS DOUBLE)
+                                      AS STRING) AS DOUBLE)
                                  / (4.0 * tot.n0 * (tot.n0 - 1))))
                              > 0 THEN
                  CAST(tot.n1 AS DOUBLE) * tot.n0
-                   * (CAST(CAST(s.r2sum0 AS VARCHAR) AS DOUBLE)
+                   * (CAST(CAST(s.r2sum0 AS STRING) AS DOUBLE)
                         / (2 * CAST(tot.n0 AS DOUBLE))
-                      - CAST(CAST(s.r2sum1 AS VARCHAR) AS DOUBLE)
+                      - CAST(CAST(s.r2sum1 AS STRING) AS DOUBLE)
                         / (2 * CAST(tot.n1 AS DOUBLE)))
                    / (CAST(tot.n1 AS DOUBLE) + tot.n0)
                    / sqrt(CAST(tot.n1 AS DOUBLE)
                           * (CAST(CAST(s.q1 * tot.n1 - s.s1 * s.s1
-                                  AS VARCHAR) AS DOUBLE)
+                                  AS STRING) AS DOUBLE)
                              / (4.0 * tot.n1 * (tot.n1 - 1)))
                           + CAST(tot.n0 AS DOUBLE)
                           * (CAST(CAST(s.q0 * tot.n0 - s.s0 * s.s0
-                                  AS VARCHAR) AS DOUBLE)
+                                  AS STRING) AS DOUBLE)
                              / (4.0 * tot.n0 * (tot.n0 - 1))))
                END AS bm_stat
         FROM s CROSS JOIN tot
@@ -4929,63 +4036,7 @@ def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     route). p_hat = (Rbar0 - (n0+1)/2)/n1 estimates P(URGENT < LOW) +
     ties/2. Guards: W NULLs when either group has < 2 observations or
     both rank variances are 0 (identical constant samples)."""
-    cum = _pooled_cumulative_ab(spark, sf_dir)
-    tot = cum.agg(
-        F.sum("a").cast("bigint").alias("n1"),
-        F.sum("b").cast("bigint").alias("n0"),
-    )
-    t_v = F.col("a") + F.col("b")
-    mr2p = 2 * F.col("cum_t") - t_v + 1
-    d1 = mr2p - (2 * F.col("cum_a") - F.col("a") + 1)
-    d0 = mr2p - (2 * F.col("cum_b") - F.col("b") + 1)
-    dev = cum.select(
-        "a",
-        "b",
-        mr2p.alias("mr2p"),
-        d1.alias("d1"),
-        d0.alias("d0"),
-    )
-    s = dev.agg(
-        F.sum(F.col("a") * F.col("mr2p").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("r2sum1"),
-        F.sum(F.col("b") * F.col("mr2p").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("r2sum0"),
-        F.sum(F.col("a") * F.col("d1").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("s1"),
-        F.sum(F.col("b") * F.col("d0").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("s0"),
-        F.sum(F.col("a") * F.col("d1").cast("decimal(38,0)") * F.col("d1"))
-        .cast("decimal(38,0)")
-        .alias("q1"),
-        F.sum(F.col("b") * F.col("d0").cast("decimal(38,0)") * F.col("d0"))
-        .cast("decimal(38,0)")
-        .alias("q0"),
-    )
-    n1d = F.col("n1").cast("double")
-    n0d = F.col("n0").cast("double")
-    rbar1 = as_d(F.col("r2sum1")) / (2 * n1d)
-    rbar0 = as_d(F.col("r2sum0")) / (2 * n0d)
-    var1 = as_d(F.col("q1") * F.col("n1") - F.col("s1") * F.col("s1")) / (
-        F.lit(4.0) * F.col("n1") * (F.col("n1") - 1)
-    )
-    var0 = as_d(F.col("q0") * F.col("n0") - F.col("s0") * F.col("s0")) / (
-        F.lit(4.0) * F.col("n0") * (F.col("n0") - 1)
-    )
-    denom = n1d * var1 + n0d * var0
-    return s.crossJoin(F.broadcast(tot)).select(
-        "n1",
-        "n0",
-        ((rbar0 - (n0d + 1) / 2) / F.col("n1")).alias("p_hat"),
-        F.when(
-            (F.col("n1") > 1) & (F.col("n0") > 1) & (denom > 0),
-            n1d * F.col("n0") * (rbar0 - rbar1) / (n1d + F.col("n0"))
-            / F.sqrt(denom),
-        ).alias("bm_stat"),
-    )
+    return run_sql(spark, sf_dir, "stat_brunner_munzel")
 
 
 # ---------------------------------------------------------------------------
@@ -5493,33 +4544,7 @@ def stat_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     all. Everything is integer until the one guarded z expression;
     the date-key join runs on the calendar-bounded daily relation, so
     corpus-scale work is only the shared daily aggregation."""
-    daily = seg_daily(spark, sf_dir)
-    b = daily.filter(F.col("segment") == "BUILDING").select(
-        "d", F.col("x").alias("xb")
-    )
-    m = daily.filter(F.col("segment") == "MACHINERY").select(
-        "d", F.col("x").alias("xm")
-    )
-    s = b.join(m, "d").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.sum(F.when(F.col("xb") > F.col("xm"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_pos"),
-        F.sum(F.when(F.col("xb") < F.col("xm"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_neg"),
-    )
-    nz = F.col("n_pos") + F.col("n_neg")
-    return s.select(
-        "n_pairs",
-        "n_pos",
-        "n_neg",
-        F.when(
-            nz > 0,
-            (F.col("n_pos") - F.col("n_neg")).cast("double")
-            / F.sqrt(nz.cast("double")),
-        ).alias("z_sign"),
-    )
+    return run_sql(spark, sf_dir, "stat_sign_test")
 
 
 # ---------------------------------------------------------------------------
@@ -5586,9 +4611,9 @@ def stat_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN CAST(nb.n AS DECIMAL(5,0)) * tot.a2 - tot.bnum <> 0
                THEN
                  (CAST(nb.n - 1 AS DOUBLE)
-                  * CAST(CAST(tot.bnum AS VARCHAR) AS DOUBLE))
+                  * CAST(CAST(tot.bnum AS STRING) AS DOUBLE))
                  / CAST(CAST(CAST(nb.n AS DECIMAL(5,0)) * tot.a2 - tot.bnum
-                        AS VARCHAR) AS DOUBLE)
+                        AS STRING) AS DOUBLE)
                END AS t3_stat
         FROM tot CROSS JOIN nb CROSS JOIN kk
     """,
@@ -5609,83 +4634,7 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge (all-scores-equal degenerates NULL identically). The
     unpartitioned range-rank window rides the <= 84-month bounded
     relation; corpus-scale work is only the shared daily agg."""
-    daily = seg_daily(spark, sf_dir)
-    cents = daily.groupBy(
-        "segment", F.trunc("d", "month").alias("mth")
-    ).agg(
-        F.sum((F.col("x") * 100).cast("bigint")).cast("bigint").alias("v")
-    )
-    kk = cents.agg(
-        F.countDistinct("segment").cast("bigint").alias("k")
-    )
-    fullm = (
-        cents.crossJoin(F.broadcast(kk))
-        .groupBy("mth", "k")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") == F.col("k"))
-        .select("mth")
-    )
-    blocks = cents.join(F.broadcast(fullm), "mth")
-    wb = Window.partitionBy("mth")
-    u = blocks.select(
-        "segment",
-        "mth",
-        (
-            2 * F.rank().over(wb.orderBy("v"))
-            + F.count(F.lit(1)).over(Window.partitionBy("mth", "v"))
-            - 1
-        ).alias("u"),
-    )
-    rng = blocks.groupBy("mth").agg(
-        (F.max("v") - F.min("v")).cast("bigint").alias("dd")
-    )
-    q = rng.select(
-        "mth",
-        (
-            2 * F.rank().over(Window.orderBy("dd"))
-            + F.count(F.lit(1)).over(Window.partitionBy("dd"))
-            - 1
-        ).alias("q"),
-    )
-    m = (
-        u.join(F.broadcast(q), "mth")
-        .crossJoin(F.broadcast(kk))
-        .select(
-            "segment",
-            (F.col("q") * (F.col("u") - F.col("k") - 1))
-            .cast("bigint")
-            .alias("m"),
-        )
-    )
-    sj = m.groupBy("segment").agg(
-        F.sum("m").cast("bigint").alias("sj"),
-        F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))
-        .cast("decimal(30,0)")
-        .alias("a2_g"),
-    )
-    nb = rng.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    tot = sj.agg(
-        F.sum(F.col("sj").cast("decimal(14,0)") * F.col("sj"))
-        .cast("decimal(30,0)")
-        .alias("bnum"),
-        F.sum("a2_g").cast("decimal(30,0)").alias("a2"),
-    )
-    den = F.col("n").cast("decimal(5,0)") * F.col("a2") - F.col("bnum")
-    return (
-        tot.crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(kk))
-        .select(
-            F.col("n").alias("n_blocks"),
-            "k",
-            (F.col("k") - 1).alias("df1"),
-            ((F.col("n") - 1) * (F.col("k") - 1)).alias("df2"),
-            F.when(
-                den != 0,
-                (F.col("n") - 1).cast("double") * as_d(F.col("bnum"))
-                / as_d(den),
-            ).alias("t3_stat"),
-        )
-    )
+    return run_sql(spark, sf_dir, "stat_quade_test")
 
 
 @register(
@@ -6335,58 +5284,7 @@ def stat_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceiling ~sf2000 before C nears 2^63 — documented); gamma is ONE
     double division. Degenerate all-tied tables (C+D=0) NULL
     identically. Corpus work: one scan + one 25-cell agg."""
-    o = load_table(spark, sf_dir, "orders")
-    rng = o.agg(
-        F.min("o_totalprice").alias("pmin"), F.max("o_totalprice").alias("pmax")
-    )
-    coded = o.crossJoin(F.broadcast(rng)).select(
-        F.substring("o_orderpriority", 1, 1).cast("int").alias("r"),
-        F.when(F.col("pmax") == F.col("pmin"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(4),
-                F.floor(
-                    (F.col("o_totalprice").cast("double")
-                     - F.col("pmin").cast("double"))
-                    / ((F.col("pmax").cast("double")
-                        - F.col("pmin").cast("double")) / F.lit(5.0))
-                ).cast("int"),
-            )
-        ).alias("b"),
-    )
-    cells = coded.groupBy("r", "b").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    c1 = cells.select(
-        F.col("r").alias("r1"), F.col("b").alias("b1"), F.col("n").alias("n1")
-    )
-    c2 = cells.select(
-        F.col("r").alias("r2"), F.col("b").alias("b2"), F.col("n").alias("n2")
-    )
-    pairs = c1.crossJoin(F.broadcast(c2)).agg(
-        F.sum(
-            F.when(
-                (F.col("r2") > F.col("r1")) & (F.col("b2") > F.col("b1")),
-                F.col("n1") * F.col("n2"),
-            ).otherwise(0)
-        ).cast("bigint").alias("c_pairs"),
-        F.sum(
-            F.when(
-                (F.col("r2") > F.col("r1")) & (F.col("b2") < F.col("b1")),
-                F.col("n1") * F.col("n2"),
-            ).otherwise(0)
-        ).cast("bigint").alias("d_pairs"),
-    )
-    tot = F.col("c_pairs") + F.col("d_pairs")
-    return pairs.select(
-        "c_pairs",
-        "d_pairs",
-        F.when(
-            tot > 0,
-            (F.col("c_pairs") - F.col("d_pairs")).cast("double")
-            / tot.cast("double"),
-        ).alias("gamma"),
-    )
+    return run_sql(spark, sf_dir, "stat_gk_gamma")
 
 
 # ---------------------------------------------------------------------------
@@ -6801,73 +5699,7 @@ def stat_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson). Scale: corpus work is the shared daily agg; all four
     sweeps and the effect re-centering run on the |years| x |segments|
     grid relation (35 rows) with bounded windows."""
-    daily = seg_daily(spark, sf_dir)
-    cell = daily.groupBy(
-        F.year("d").alias("y"), "segment"
-    ).agg(
-        (F.sum("x").cast("decimal(18,2)") * 100).cast("bigint").alias("v")
-    )
-    yrs = cell.select("y").distinct()
-    sgs = cell.select("segment").distinct()
-    grid = (
-        yrs.crossJoin(F.broadcast(sgs))
-        .join(F.broadcast(cell), ["y", "segment"], "left")
-        .select(
-            "y", "segment", F.coalesce(F.col("v"), F.lit(0)).alias("v")
-        )
-    )
-    r1 = _lomed(grid, "y", "v", "segment").select(
-        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
-        F.col("med").alias("ay"),
-    )
-    r2 = _lomed(r1, "segment", "v", "y").select(
-        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
-        "ay", F.col("med").alias("bs"),
-    )
-    r3 = _lomed(r2, "y", "v", "segment").select(
-        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
-        (F.col("ay") + F.col("med")).alias("ay"), "bs",
-    )
-    r4 = _lomed(r3, "segment", "v", "y").select(
-        "y", "segment", (F.col("v") - F.col("med")).alias("v"),
-        "ay", (F.col("bs") + F.col("med")).alias("bs"),
-    )
-
-    def _global_lomed(df, val, tie, out):
-        wrn = Window.orderBy(val, tie)  # effect-sized relation only
-        wall = Window.partitionBy(F.lit(1))
-        return (
-            df.withColumn(
-                "_pick",
-                F.when(
-                    F.row_number().over(wrn)
-                    == (F.count(F.lit(1)).over(wall) + 1) / 2,
-                    F.col(val),
-                ),
-            )
-            .agg(F.max("_pick").cast("bigint").alias(out))
-        )
-
-    ma = _global_lomed(r4.select("y", "ay").distinct(), "ay", "y", "med_a")
-    mb = _global_lomed(
-        r4.select("segment", "bs").distinct(), "bs", "segment", "med_b"
-    )
-    return (
-        r4.crossJoin(F.broadcast(ma))
-        .crossJoin(F.broadcast(mb))
-        .select(
-            F.col("y").cast("bigint").alias("year"),
-            "segment",
-            (F.col("v").cast("double") / F.lit(100.0)).alias("residual"),
-            ((F.col("ay") - F.col("med_a")).cast("double") / F.lit(100.0))
-            .alias("row_effect"),
-            ((F.col("bs") - F.col("med_b")).cast("double") / F.lit(100.0))
-            .alias("col_effect"),
-            ((F.col("med_a") + F.col("med_b")).cast("double") / F.lit(100.0))
-            .alias("overall"),
-        )
-        .orderBy("year", "segment")
-    )
+    return run_sql(spark, sf_dir, "stat_median_polish")
 
 
 # ---------------------------------------------------------------------------
@@ -7187,7 +6019,7 @@ def stat_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         hx AS (
             SELECT -CAST(CAST(SUM(s * CAST(ln(CAST(s AS DOUBLE)
                         / CAST(t.n AS DOUBLE)) AS DECIMAL(12,6)))
-                     AS VARCHAR) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
+                     AS STRING) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
             FROM (SELECT x, CAST(SUM(n) AS BIGINT) AS s
                   FROM cells GROUP BY x) CROSS JOIN tot t
             GROUP BY t.n
@@ -7195,7 +6027,7 @@ def stat_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         hy AS (
             SELECT -CAST(CAST(SUM(s * CAST(ln(CAST(s AS DOUBLE)
                         / CAST(t.n AS DOUBLE)) AS DECIMAL(12,6)))
-                     AS VARCHAR) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
+                     AS STRING) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
             FROM (SELECT y, CAST(SUM(n) AS BIGINT) AS s
                   FROM cells GROUP BY y) CROSS JOIN tot t
             GROUP BY t.n
@@ -7203,7 +6035,7 @@ def stat_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         hxy AS (
             SELECT -CAST(CAST(SUM(c.n * CAST(ln(CAST(c.n AS DOUBLE)
                         / CAST(t.n AS DOUBLE)) AS DECIMAL(12,6)))
-                     AS VARCHAR) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
+                     AS STRING) AS DOUBLE) / CAST(t.n AS DOUBLE) AS h
             FROM cells c CROSS JOIN tot t
             GROUP BY t.n
         )
@@ -7228,56 +6060,7 @@ def stat_uncertainty_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     VARCHAR, and the final U is one identically-parenthesized double
     expression with a degenerate-entropy NULL guard (single-category
     marginals give H = 0). Grid-sized state after one scan."""
-    o = load_table(spark, sf_dir, "orders")
-    cells = (
-        o.groupBy(
-            F.col("o_orderpriority").alias("x"),
-            F.col("o_orderstatus").alias("y"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    tot = cells.agg(F.sum("n").cast("bigint").alias("nt"))
-
-    def _h(counts: DataFrame, cname: str):
-        lnq = F.log(
-            F.col(cname).cast("double") / F.col("nt").cast("double")
-        ).cast("decimal(12,6)")
-        return counts.crossJoin(F.broadcast(tot)).agg(
-            (
-                (-as_d(F.sum(F.col(cname) * lnq)))
-                / F.max("nt").cast("double")
-            ).alias("h")
-        )
-
-    hx = _h(
-        cells.groupBy("x").agg(F.sum("n").cast("bigint").alias("s")), "s"
-    ).select(F.col("h").alias("h_x"))
-    hy = _h(
-        cells.groupBy("y").agg(F.sum("n").cast("bigint").alias("s")), "s"
-    ).select(F.col("h").alias("h_y"))
-    hxy = _h(cells, "n").select(F.col("h").alias("h_xy"))
-    return (
-        tot.select(F.col("nt").alias("n"))
-        .crossJoin(F.broadcast(hx))
-        .crossJoin(F.broadcast(hy))
-        .crossJoin(F.broadcast(hxy))
-        .select(
-            "n",
-            "h_x",
-            "h_y",
-            "h_xy",
-            F.when(
-                F.col("h_y") > 0,
-                ((F.col("h_x") + F.col("h_y")) - F.col("h_xy"))
-                / F.col("h_y"),
-            ).alias("u_y_given_x"),
-            F.when(
-                F.col("h_x") > 0,
-                ((F.col("h_x") + F.col("h_y")) - F.col("h_xy"))
-                / F.col("h_x"),
-            ).alias("u_x_given_y"),
-        )
-    )
+    return run_sql(spark, sf_dir, "stat_uncertainty_coeff")
 
 
 # ---------------------------------------------------------------------------
@@ -7335,21 +6118,21 @@ def _chow_sums_sql(tag: str, pred: str) -> str:
             SELECT n_1, n_2,
                    CAST(n_1 AS DOUBLE) AS n1d, CAST(n_2 AS DOUBLE) AS n2d,
                    CAST(n_1 + n_2 AS DOUBLE) AS npd,
-                   CAST(CAST(sx_1 AS VARCHAR) AS DOUBLE) AS sx1,
-                   CAST(CAST(sy_1 AS VARCHAR) AS DOUBLE) AS sy1,
-                   CAST(CAST(sxx_1 AS VARCHAR) AS DOUBLE) AS sxx1,
-                   CAST(CAST(sxy_1 AS VARCHAR) AS DOUBLE) AS sxy1,
-                   CAST(CAST(syy_1 AS VARCHAR) AS DOUBLE) AS syy1,
-                   CAST(CAST(sx_2 AS VARCHAR) AS DOUBLE) AS sx2,
-                   CAST(CAST(sy_2 AS VARCHAR) AS DOUBLE) AS sy2,
-                   CAST(CAST(sxx_2 AS VARCHAR) AS DOUBLE) AS sxx2,
-                   CAST(CAST(sxy_2 AS VARCHAR) AS DOUBLE) AS sxy2,
-                   CAST(CAST(syy_2 AS VARCHAR) AS DOUBLE) AS syy2,
-                   CAST(CAST(sx_1 + sx_2 AS VARCHAR) AS DOUBLE) AS sxp,
-                   CAST(CAST(sy_1 + sy_2 AS VARCHAR) AS DOUBLE) AS syp,
-                   CAST(CAST(sxx_1 + sxx_2 AS VARCHAR) AS DOUBLE) AS sxxp,
-                   CAST(CAST(sxy_1 + sxy_2 AS VARCHAR) AS DOUBLE) AS sxyp,
-                   CAST(CAST(syy_1 + syy_2 AS VARCHAR) AS DOUBLE) AS syyp
+                   CAST(CAST(sx_1 AS STRING) AS DOUBLE) AS sx1,
+                   CAST(CAST(sy_1 AS STRING) AS DOUBLE) AS sy1,
+                   CAST(CAST(sxx_1 AS STRING) AS DOUBLE) AS sxx1,
+                   CAST(CAST(sxy_1 AS STRING) AS DOUBLE) AS sxy1,
+                   CAST(CAST(syy_1 AS STRING) AS DOUBLE) AS syy1,
+                   CAST(CAST(sx_2 AS STRING) AS DOUBLE) AS sx2,
+                   CAST(CAST(sy_2 AS STRING) AS DOUBLE) AS sy2,
+                   CAST(CAST(sxx_2 AS STRING) AS DOUBLE) AS sxx2,
+                   CAST(CAST(sxy_2 AS STRING) AS DOUBLE) AS sxy2,
+                   CAST(CAST(syy_2 AS STRING) AS DOUBLE) AS syy2,
+                   CAST(CAST(sx_1 + sx_2 AS STRING) AS DOUBLE) AS sxp,
+                   CAST(CAST(sy_1 + sy_2 AS STRING) AS DOUBLE) AS syp,
+                   CAST(CAST(sxx_1 + sxx_2 AS STRING) AS DOUBLE) AS sxxp,
+                   CAST(CAST(sxy_1 + sxy_2 AS STRING) AS DOUBLE) AS sxyp,
+                   CAST(CAST(syy_1 + syy_2 AS STRING) AS DOUBLE) AS syyp
             FROM sums
         ),
         rss AS (
@@ -7378,116 +6161,7 @@ def _chow_sums_sql(tag: str, pred: str) -> str:
     """,
 )
 def stat_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chow structural-break test for the price ~ quantity regression
-    at a {split} ship-date split: F = ((RSS_pooled - RSS_1 - RSS_2)/k)
-    / ((RSS_1 + RSS_2)/(n - 2k)) with k = 2 parameters per segment
-    (Chow 1960) — the regime-change screen a pricing-drift monitor
-    runs before trusting one global fit. Exactness: x (quantity) and
-    y (price) quantize to exact cents BIGINTs; the six sufficient
-    sums per segment accumulate in DECIMAL(38,0) (one scan, 12
-    conditional sums); pooled sums are exact decimal ADDITIONS of the
-    segment sums (never re-scanned); every sum crosses to double once
-    via VARCHAR, and each RSS is the same identically-parenthesized
-    centered-cross-product expression on both engines. Degenerate
-    guards (segment too small, zero residual variance) NULL the F
-    identically. The cross-products exceed DECIMAL(38) range, so they
-    are formed in doubles AFTER the crossing — same IEEE ops, same
-    bits, both engines.""".replace("{split}", _CHOW_SPLIT)
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.select(
-        (F.col("l_quantity").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("xq"),
-        (F.col("l_extendedprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("yq"),
-        (F.col("l_shipdate").cast("date") < F.lit(_CHOW_SPLIT).cast("date"))
-        .alias("pre"),
-    )
-
-    def seg_aggs(tag: str, pred):
-        z = F.lit(0)
-        return [
-            F.sum(F.when(pred, 1).otherwise(0)).cast("bigint").alias(f"n_{tag}"),
-            F.sum(F.when(pred, F.col("xq")).otherwise(z)).alias(f"sx_{tag}"),
-            F.sum(F.when(pred, F.col("yq")).otherwise(z)).alias(f"sy_{tag}"),
-            F.sum(F.when(pred, F.col("xq") * F.col("xq")).otherwise(z)).alias(
-                f"sxx_{tag}"
-            ),
-            F.sum(
-                F.when(
-                    pred, F.col("xq").cast("decimal(38,0)") * F.col("yq")
-                ).otherwise(z.cast("decimal(38,0)"))
-            ).alias(f"sxy_{tag}"),
-            F.sum(
-                F.when(
-                    pred, F.col("yq").cast("decimal(38,0)") * F.col("yq")
-                ).otherwise(z.cast("decimal(38,0)"))
-            ).alias(f"syy_{tag}"),
-        ]
-
-    sums = base.agg(
-        *(seg_aggs("1", F.col("pre")) + seg_aggs("2", ~F.col("pre")))
-    )
-
-    def rss(n, sx, sy, sxx, sxy, syy):
-        return (syy - sy * sy / n) - (sxy - sx * sy / n) * (
-            sxy - sx * sy / n
-        ) / (sxx - sx * sx / n)
-
-    wide = sums.select(
-        "n_1",
-        "n_2",
-        F.col("n_1").cast("double").alias("n1d"),
-        F.col("n_2").cast("double").alias("n2d"),
-        (F.col("n_1") + F.col("n_2")).cast("double").alias("npd"),
-        *[
-            as_d(F.col(f"{s}_{t}")).alias(f"{s}{t}")
-            for t in ("1", "2")
-            for s in ("sx", "sy", "sxx", "sxy", "syy")
-        ],
-        *[
-            as_d(F.col(f"{s}_1") + F.col(f"{s}_2")).alias(f"{s}p")
-            for s in ("sx", "sy", "sxx", "sxy", "syy")
-        ],
-    )
-    out = wide.select(
-        F.col("n_1").alias("n_pre"),
-        F.col("n_2").alias("n_post"),
-        rss(
-            F.col("npd"), F.col("sxp"), F.col("syp"),
-            F.col("sxxp"), F.col("sxyp"), F.col("syyp"),
-        ).alias("rss_pooled"),
-        (
-            rss(
-                F.col("n1d"), F.col("sx1"), F.col("sy1"),
-                F.col("sxx1"), F.col("sxy1"), F.col("syy1"),
-            )
-            + rss(
-                F.col("n2d"), F.col("sx2"), F.col("sy2"),
-                F.col("sxx2"), F.col("sxy2"), F.col("syy2"),
-            )
-        ).alias("rss_segmented"),
-    )
-    return out.select(
-        "n_pre",
-        "n_post",
-        "rss_pooled",
-        "rss_segmented",
-        F.when(
-            (F.col("n_pre") > 2)
-            & (F.col("n_post") > 2)
-            & (F.col("rss_segmented") > 0),
-            (
-                (F.col("rss_pooled") - F.col("rss_segmented"))
-                / F.lit("2.0").cast("double")
-            )
-            / (
-                F.col("rss_segmented")
-                / (F.col("n_pre") + F.col("n_post") - 4).cast("double")
-            ),
-        ).alias("f_stat"),
-    )
+    return run_sql(spark, sf_dir, "stat_chow_test")
 
 
 # ---------------------------------------------------------------------------
@@ -7523,7 +6197,7 @@ def stat_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT t.n,
                CAST((d.nr - 1) * (d.nc - 1) AS BIGINT) AS df,
                CAST('2.0' AS DOUBLE)
-                 * CAST(CAST(SUM(term) AS VARCHAR) AS DOUBLE) AS g_stat
+                 * CAST(CAST(SUM(term) AS STRING) AS DOUBLE) AS g_stat
         FROM terms, tot t, dims d
         GROUP BY t.n, d.nr, d.nc
     """,
@@ -7541,45 +6215,7 @@ def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     final multiplication. Empty cells contribute nothing (inner join
     on observed cells — 0 ln 0 = 0, the standard convention). One scan
     + grid-sized joins."""
-    o = load_table(spark, sf_dir, "orders")
-    cells = (
-        o.groupBy(
-            F.col("o_orderpriority").alias("x"),
-            F.col("o_orderstatus").alias("y"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
-    )
-    rows_t = cells.groupBy("x").agg(F.sum("o").cast("bigint").alias("r"))
-    cols_t = cells.groupBy("y").agg(F.sum("o").cast("bigint").alias("c"))
-    tot = cells.agg(F.sum("o").cast("bigint").alias("n"))
-    dims = rows_t.agg(F.count(F.lit(1)).cast("bigint").alias("nr")).crossJoin(
-        F.broadcast(cols_t.agg(F.count(F.lit(1)).cast("bigint").alias("nc")))
-    )
-    lnq = F.log(
-        (F.col("o").cast("double") * F.col("n").cast("double"))
-        / (F.col("r").cast("double") * F.col("c").cast("double"))
-    ).cast("decimal(12,6)")
-    terms = (
-        cells.join(rows_t, "x")
-        .join(cols_t, "y")
-        .crossJoin(F.broadcast(tot))
-        .select("n", (F.col("o") * lnq).alias("term"))
-    )
-    return (
-        terms.groupBy("n")
-        .agg(
-            (
-                F.lit("2.0").cast("double")
-                * F.sum("term").cast("string").cast("double")
-            ).alias("g_stat")
-        )
-        .crossJoin(F.broadcast(dims))
-        .select(
-            "n",
-            ((F.col("nr") - 1) * (F.col("nc") - 1)).cast("bigint").alias("df"),
-            "g_stat",
-        )
-    )
+    return run_sql(spark, sf_dir, "stat_g_test")
 
 
 # ---------------------------------------------------------------------------
@@ -7869,61 +6505,7 @@ def stat_cramers_v_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed to one shared double expression, NULL-guarded on the
     degenerate 1xC/Rx1 shrink with the IDENTICAL predicate.
     Corpus-scale work: one grouped count."""
-    li = load_table(spark, sf_dir, "lineitem")
-    cells = li.groupBy(
-        F.col("l_returnflag").alias("r"), F.col("l_linestatus").alias("c")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    wr = Window.partitionBy("r")
-    wc = Window.partitionBy("c")
-    wall = Window.partitionBy()
-    m = cells.select(
-        "r",
-        "c",
-        "o",
-        F.sum("o").over(wr).cast("bigint").alias("nr"),
-        F.sum("o").over(wc).cast("bigint").alias("nc"),
-        F.sum("o").over(wall).cast("bigint").alias("n"),
-    )
-    tots = m.agg(
-        F.max("n").alias("n"),
-        F.countDistinct("r").alias("nrows"),
-        F.countDistinct("c").alias("ncols"),
-        (
-            as_d(
-                F.sum(F.floor(phi2_cell() * F.lit(1e15)).cast("decimal(38,0)"))
-            )
-            / F.lit(1e15)
-        ).alias("phi2"),
-    )
-    zero = F.lit(0).cast("double")
-    one = F.lit(1).cast("double")
-    nd = (F.col("n") - 1).cast("double")
-    phi2_corr = F.greatest(
-        zero,
-        F.col("phi2")
-        - ((F.col("nrows") - 1) * (F.col("ncols") - 1)).cast("double") / nd,
-    )
-    r_corr = (
-        F.col("nrows").cast("double")
-        - ((F.col("nrows") - 1) * (F.col("nrows") - 1)).cast("double") / nd
-        - one
-    )
-    c_corr = (
-        F.col("ncols").cast("double")
-        - ((F.col("ncols") - 1) * (F.col("ncols") - 1)).cast("double") / nd
-        - one
-    )
-    denom = F.least(r_corr, c_corr)
-    return tots.select(
-        F.col("n").cast("bigint").alias("n"),
-        F.col("nrows").cast("bigint").alias("n_rows"),
-        F.col("ncols").cast("bigint").alias("n_cols"),
-        "phi2",
-        phi2_corr.alias("phi2_corr"),
-        F.when(denom > zero, F.sqrt(phi2_corr / denom)).alias(
-            "cramers_v_corrected"
-        ),
-    )
+    return run_sql(spark, sf_dir, "stat_cramers_v_corrected")
 
 
 # ---------------------------------------------------------------------------
@@ -8438,49 +7020,8 @@ def stat_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
     one double expression over integers. Distributed shape: windows
     partition per event type over CALENDAR-bounded daily rows (the
     Hampel/Friedman contract — days grow with time, not SF; the
-    corpus-scaled work is the one daily pre-agg in daily_q6)."""
-    daily = daily_q6(spark, sf_dir)
-    r2 = (
-        F.lit(2)
-        * F.rank().over(Window.partitionBy("event_type").orderBy("v"))
-        + F.count(F.lit(1)).over(Window.partitionBy("event_type", "v"))
-        - F.lit(1)
-    )
-    ranked = daily.select("event_type", "d", r2.alias("r2"))
-    w_t = Window.partitionBy("event_type").orderBy("d")
-    w_all = Window.partitionBy("event_type")
-    seq = ranked.select(
-        "event_type",
-        "r2",
-        F.lead("r2").over(w_t).alias("r2n"),
-        F.count(F.lit(1)).over(w_all).alias("nt"),
-    )
-    per = seq.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(
-            F.when(
-                F.col("r2n").isNotNull(),
-                (F.col("r2") - F.col("r2n")) * (F.col("r2") - F.col("r2n")),
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("num4"),
-        F.sum(
-            (F.col("r2") - (F.col("nt") + 1))
-            * (F.col("r2") - (F.col("nt") + 1))
-        )
-        .cast("bigint")
-        .alias("den4"),
-    )
-    nd = F.col("n")
-    rvn = F.col("num4").cast("double") / F.col("den4").cast("double")
-    z = (rvn - F.lit(2).cast("double")) / F.sqrt(
-        (4 * (nd - 2) * (5 * nd * nd - 2 * nd - 9)).cast("double")
-        / (5 * nd * (nd + 1) * (nd - 1) * (nd - 1)).cast("double")
-    )
-    return per.select(
-        "event_type", "n", "num4", "den4", rvn.alias("rvn"), z.alias("z")
-    )
+    corpus-scaled work is the one daily pre-agg in DAILY_Q6_SQL)."""
+    return run_sql(spark, sf_dir, "stat_bartels_rank_vn")
 
 
 # ---------------------------------------------------------------------------
@@ -8513,14 +7054,14 @@ def stat_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT n,
                CAST(sxc AS DOUBLE) / CAST(100 AS DOUBLE)
                    / CAST(n AS DOUBLE) AS mean_value,
-               CAST(CAST(sxlnx AS VARCHAR) AS DOUBLE)
+               CAST(CAST(sxlnx AS STRING) AS DOUBLE)
                    / CAST(sxc AS DOUBLE)
                  - CAST(ln(CAST(sxc AS DOUBLE) / CAST(100 AS DOUBLE)
                            / CAST(n AS DOUBLE)) AS DECIMAL(12,6))
                    AS theil_t,
                CAST(ln(CAST(sxc AS DOUBLE) / CAST(100 AS DOUBLE)
                        / CAST(n AS DOUBLE)) AS DECIMAL(12,6))
-                 - CAST(CAST(slnx AS VARCHAR) AS DOUBLE)
+                 - CAST(CAST(slnx AS STRING) AS DOUBLE)
                    / CAST(n AS DOUBLE) AS theil_l
         FROM sums
     """,
@@ -8538,39 +7079,7 @@ def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     assembly is one shared expression. Distributed shape: ONE
     map-side-combining scan, 1-row state — runs at any SF for the
     cost of a count."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
-    base = o.select(
-        (F.col("o_totalprice").cast("decimal(12,2)") * F.lit(100))
-        .cast("bigint")
-        .alias("xc")
-    )
-    lnx = F.log(F.col("xc").cast("double") / F.lit(100).cast("double")).cast(
-        "decimal(12,6)"
-    )
-    sums = base.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("xc").cast("bigint").alias("sxc"),
-        F.sum(F.col("xc").cast("decimal(19,0)") * lnx)
-        .cast("decimal(38,6)")
-        .alias("sxlnx"),
-        F.sum(lnx).cast("decimal(38,6)").alias("slnx"),
-    )
-    mean_d = (
-        F.col("sxc").cast("double")
-        / F.lit(100).cast("double")
-        / F.col("n").cast("double")
-    )
-    ln_mean = F.log(mean_d).cast("decimal(12,6)")
-    return sums.select(
-        "n",
-        mean_d.alias("mean_value"),
-        (
-            as_d(F.col("sxlnx")) / F.col("sxc").cast("double") - ln_mean
-        ).alias("theil_t"),
-        (
-            ln_mean - as_d(F.col("slnx")) / F.col("n").cast("double")
-        ).alias("theil_l"),
-    )
+    return run_sql(spark, sf_dir, "stat_theil_index")
 
 
 # ---------------------------------------------------------------------------
@@ -8621,7 +7130,7 @@ def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / CAST(n AS DOUBLE))
                    / sqrt(CAST(m AS DOUBLE) * CAST(n - m AS DOUBLE)
                           * (CAST(n AS DOUBLE)
-                               * CAST(CAST(t2w AS VARCHAR) AS DOUBLE)
+                               * CAST(CAST(t2w AS STRING) AS DOUBLE)
                              - CAST(t1w AS DOUBLE) * CAST(t1w AS DOUBLE))
                           / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
                              * CAST(n - 1 AS DOUBLE))) AS zw,
@@ -8630,7 +7139,7 @@ def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / CAST(n AS DOUBLE))
                    / sqrt(CAST(m AS DOUBLE) * CAST(n - m AS DOUBLE)
                           * (CAST(n AS DOUBLE)
-                               * CAST(CAST(t2a AS VARCHAR) AS DOUBLE)
+                               * CAST(CAST(t2a AS STRING) AS DOUBLE)
                              - CAST(t1a AS DOUBLE) * CAST(t1a AS DOUBLE))
                           / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
                              * CAST(n - 1 AS DOUBLE))) AS za
@@ -8659,82 +7168,7 @@ def stat_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically-parenthesized double expression; L is their square
     sum. Distributed shape: one cell agg, cell-bounded windows,
     1-row state."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag").isin("R", "N")
-    )
-    base = li.select(
-        F.col("l_quantity").cast("decimal(12,2)").alias("v"),
-        (F.col("l_returnflag") == "R").cast("int").alias("is_x"),
-    )
-    cells = base.groupBy("v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("ct"),
-        F.sum("is_x").cast("bigint").alias("cx"),
-    )
-    w_cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    ranked = cells.select(
-        "ct",
-        "cx",
-        (
-            F.lit(2) * (F.sum("ct").over(w_cum) - F.col("ct"))
-            + F.col("ct")
-            + F.lit(1)
-        ).alias("mr2"),
-        F.sum("ct").over(w_all).cast("bigint").alias("n"),
-        F.sum("cx").over(w_all).cast("bigint").alias("m"),
-    )
-    scored = ranked.select(
-        "ct",
-        "cx",
-        "n",
-        "m",
-        "mr2",
-        F.least(
-            F.col("mr2"), F.lit(2) * (F.col("n") + 1) - F.col("mr2")
-        ).alias("ab2"),
-    )
-    dec = "decimal(38,0)"
-    mom = scored.agg(
-        F.max("n").alias("n"),
-        F.max("m").alias("m"),
-        F.sum(F.col("cx") * F.col("mr2")).cast("bigint").alias("sw"),
-        F.sum(F.col("ct") * F.col("mr2")).cast("bigint").alias("t1w"),
-        F.sum(F.col("ct").cast(dec) * F.col("mr2") * F.col("mr2")).alias(
-            "t2w"
-        ),
-        F.sum(F.col("cx") * F.col("ab2")).cast("bigint").alias("sa"),
-        F.sum(F.col("ct") * F.col("ab2")).cast("bigint").alias("t1a"),
-        F.sum(F.col("ct").cast(dec) * F.col("ab2") * F.col("ab2")).alias(
-            "t2a"
-        ),
-    )
-
-    def _z(s, t1, t2):
-        nd = F.col("n").cast("double")
-        md = F.col("m").cast("double")
-        nmd = (F.col("n") - F.col("m")).cast("double")
-        return (
-            F.col(s).cast("double")
-            - md * F.col(t1).cast("double") / nd
-        ) / F.sqrt(
-            md
-            * nmd
-            * (
-                nd * as_d(F.col(t2))
-                - F.col(t1).cast("double") * F.col(t1).cast("double")
-            )
-            / (nd * nd * (F.col("n") - 1).cast("double"))
-        )
-
-    zw = _z("sw", "t1w", "t2w")
-    za = _z("sa", "t1a", "t2a")
-    return mom.select(
-        F.col("m").cast("bigint").alias("n_x"),
-        (F.col("n") - F.col("m")).cast("bigint").alias("n_y"),
-        zw.alias("z_wilcoxon"),
-        za.alias("z_ansari"),
-        (zw * zw + za * za).alias("lepage_l"),
-    )
+    return run_sql(spark, sf_dir, "stat_lepage")
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from finance_etl_spark.plans.recipes import (
     TOKENS_SQL,
     tokens,
 )
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, run_sql
 
 
 @register(
@@ -45,15 +45,7 @@ def text_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by normalized-content hash: one hash-shuffle on the
     digest, keep the smallest doc_id per group (deterministic survivor
     policy). The reference's J1 anti-join consumes exactly this shape."""
-    d = load_table_parallel(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", F.md5(F.lower(F.trim("text"))).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
+    return run_sql(spark, sf_dir, "text_exact_dedup")
 
 
 @register(

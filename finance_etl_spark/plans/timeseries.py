@@ -15,7 +15,6 @@ from finance_etl_spark.functions.money import (
     DEC,
     as_d,
     dsum,
-    lsum,
     o_dsum,
     o_fsum,
     o_lsum,
@@ -37,7 +36,6 @@ from finance_etl_spark.plans.recipes import (
     MKT_RET_SQL,
     SEG_DAILY_SQL,
     SEG_RET_SQL,
-    cusum_changepoint,
     daily_q6,
     daily_scaled,
     event_daily,
@@ -49,7 +47,7 @@ from finance_etl_spark.plans.recipes import (
     seg_daily,
     seg_returns,
 )
-from finance_etl_spark.plans.registry import register
+from finance_etl_spark.plans.registry import register, run_sql
 
 
 def _events(spark, sf_dir, etype: str) -> DataFrame:
@@ -282,8 +280,8 @@ def ts_ohlc_vwap_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM events GROUP BY event_type, day
         ), rolled AS (
             SELECT event_type, day,
-                   CAST(CAST(SUM(s1) OVER w AS VARCHAR) AS DOUBLE) / 1e6 AS r1,
-                   CAST(CAST(SUM(s2) OVER w AS VARCHAR) AS DOUBLE) / 1e6 AS r2,
+                   CAST(CAST(SUM(s1) OVER w AS STRING) AS DOUBLE) / 1e6 AS r1,
+                   CAST(CAST(SUM(s2) OVER w AS STRING) AS DOUBLE) / 1e6 AS r2,
                    CAST(SUM(n) OVER w AS DOUBLE) AS rn
             FROM daily
             WINDOW w AS (PARTITION BY event_type ORDER BY day
@@ -310,34 +308,7 @@ def ts_rolling_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (+,-,*,/ and correctly-rounded sqrt only, no libm), so
     both engines agree bitwise; micro-unit truncation is the declared
     semantics."""
-    MICRO = "decimal(30,0)"
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 1e6).cast(MICRO)).alias("s1"),
-            F.sum(
-                F.floor(F.col("value") * F.col("value") * 1e6).cast(MICRO)
-            ).alias("s2"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    r1 = F.sum("s1").over(w).cast("double") / F.lit(1e6)
-    r2 = F.sum("s2").over(w).cast("double") / F.lit(1e6)
-    rn = F.sum("n").over(w).cast("double")
-    var = (r2 - r1 * r1 / rn) / (rn - F.lit(1.0))
-    return daily.select(
-        "event_type",
-        "day",
-        F.when(rn > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).alias("vol_7d"),
-    )
+    return run_sql(spark, sf_dir, "ts_rolling_volatility")
 
 
 @register(
@@ -480,7 +451,7 @@ def ts_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(CAST(SUM(CAST(daily_value AS DECIMAL(30,10)))
                         OVER (PARTITION BY event_type ORDER BY day
                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS VARCHAR) AS DOUBLE) AS equity
+                        AS STRING) AS DOUBLE) AS equity
             FROM daily
         ), dd AS (
             SELECT event_type, day, equity,
@@ -501,29 +472,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     min are single IEEE ops, so the result is engine- and
     partitioning-deterministic. Three window passes all run over the
     compacted one-row-per-day series, then a final hash agg."""
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(dsum("value").alias("daily_value"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    equity = F.sum(F.col("daily_value").cast(DEC)).over(w).cast("double")
-    with_eq = daily.select("event_type", "day", equity.alias("equity"))
-    drawdown = F.col("equity") / F.max("equity").over(w) - F.lit(1.0)
-    return (
-        with_eq.select("event_type", "day", drawdown.alias("drawdown"))
-        .groupBy("event_type")
-        .agg(
-            F.min("drawdown").alias("max_drawdown"),
-            F.count(F.lit(1)).alias("n_days"),
-        )
-    )
+    return run_sql(spark, sf_dir, "ts_max_drawdown")
 
 
 @register(
@@ -603,42 +552,7 @@ def ts_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     all three Window nodes, vs the naive three self-joins. Stage
     timestamps are per-user constants; a distinct + single-row count
     rolls the funnel up. No per-event state leaves the user partition."""
-    w = Window.partitionBy("user_id")
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    s1 = ev.withColumn(
-        "t_view",
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-    )
-    s2 = s1.withColumn(
-        "t_click",
-        F.min(
-            F.when(
-                (F.col("event_type") == "click")
-                & (F.col("ts") >= F.col("t_view"))
-                & (F.col("ts") <= F.col("t_view") + F.expr("INTERVAL 7 DAY")),
-                F.col("ts"),
-            )
-        ).over(w),
-    )
-    s3 = s2.withColumn(
-        "t_purchase",
-        F.min(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("ts") >= F.col("t_click"))
-                & (F.col("ts") <= F.col("t_click") + F.expr("INTERVAL 7 DAY")),
-                F.col("ts"),
-            )
-        ).over(w),
-    )
-    per_user = s3.select("user_id", "t_view", "t_click", "t_purchase").distinct()
-    flag = lambda c: F.sum(F.when(F.col(c).isNotNull(), 1).otherwise(0)).cast("long")
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        flag("t_view").alias("n_viewed"),
-        flag("t_click").alias("n_clicked"),
-        flag("t_purchase").alias("n_purchased"),
-    )
+    return run_sql(spark, sf_dir, "ts_funnel_conversion")
 
 
 @register(
@@ -723,22 +637,22 @@ def ts_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(ts AS DATE) AS d,
                    CAST(CAST(SUM(CASE WHEN event_type = 'click'
                         THEN CAST(value AS DECIMAL(15,4))
-                        ELSE CAST(0 AS DECIMAL(15,4)) END) AS VARCHAR)
+                        ELSE CAST(0 AS DECIMAL(15,4)) END) AS STRING)
                         AS DECIMAL(15,4)) AS x,
                    CAST(CAST(SUM(CASE WHEN event_type = 'view'
                         THEN CAST(value AS DECIMAL(15,4))
-                        ELSE CAST(0 AS DECIMAL(15,4)) END) AS VARCHAR)
+                        ELSE CAST(0 AS DECIMAL(15,4)) END) AS STRING)
                         AS DECIMAL(15,4)) AS y
             FROM events GROUP BY CAST(ts AS DATE)
         ),
         p AS (
             SELECT d,
                    COUNT(*) OVER w AS n,
-                   CAST(CAST(SUM(x) OVER w AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(y) OVER w AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(x * y) OVER w AS VARCHAR) AS DOUBLE) AS sxy,
-                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) OVER w AS VARCHAR) AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(y * y) OVER w AS VARCHAR) AS DOUBLE) AS syy
+                   CAST(CAST(SUM(x) OVER w AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(y) OVER w AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(x * y) OVER w AS STRING) AS DOUBLE) AS sxy,
+                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) OVER w AS STRING) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(y * y) OVER w AS STRING) AS DOUBLE) AS syy
             FROM daily
             WINDOW w AS (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
         )
@@ -760,36 +674,7 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor first so no engine-ambiguous >15-digit double product ever
     forms. Partial frames (first 6 days) are excluded — their
     correlation would be over a different support than declared."""
-    e = load_table(spark, sf_dir, "events")
-    dec = "decimal(15,4)"
-    zero = F.lit(0).cast(dec)
-    daily = e.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.sum(
-            F.when(F.col("event_type") == "click", F.col("value").cast(dec))
-            .otherwise(zero)
-        ).cast(dec).alias("x"),
-        F.sum(
-            F.when(F.col("event_type") == "view", F.col("value").cast(dec))
-            .otherwise(zero)
-        ).cast(dec).alias("y"),
-    )
-    w = Window.orderBy("d").rowsBetween(-6, 0)
-    x, y = F.col("x"), F.col("y")
-    p = daily.select(
-        "d",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(x).over(w).cast("double").alias("sx"),
-        F.sum(y).over(w).cast("double").alias("sy"),
-        F.sum(x * y).over(w).cast("double").alias("sxy"),
-        F.sum(x * x).over(w).cast("double").alias("sxx"),
-        F.sum(y * y).over(w).cast("double").alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    corr = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.sqrt(n * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * F.sqrt(n * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
-    return p.filter(F.col("n") == 7).select("d", corr.alias("corr_click_view"))
+    return run_sql(spark, sf_dir, "ts_rolling_corr")
 
 
 @register(
@@ -1018,28 +903,12 @@ def ts_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar days (the canonical retention/engagement shape SQL lacks a
     primitive for). The row_number anchor trick — day minus per-user
     rank is constant exactly within a consecutive run — turns island
-    detection into a plain groupBy: one user-partitioned window sort
+    detection into a plain GROUP BY: one user-partitioned window sort
     over the (user, day)-DISTINCT relation (already compacted from raw
     events), then two hash aggs that reuse the same user partitioning.
     No self-join, no per-row gap probing, state bounded by active days
     per user."""
-    days = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", F.col("ts").cast("date").alias("d"))
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("d")
-    anchored = days.withColumn(
-        "anchor", F.date_sub(F.col("d"), F.row_number().over(w))
-    )
-    islands = anchored.groupBy("user_id", "anchor").agg(
-        F.count(F.lit(1)).alias("len")
-    )
-    return islands.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_streaks"),
-        F.max("len").alias("longest_streak"),
-        F.sum("len").alias("active_days"),
-    )
+    return run_sql(spark, sf_dir, "ts_gaps_islands")
 
 
 @register(
@@ -1119,10 +988,10 @@ def ts_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM events GROUP BY 1, 2
         ), stats AS (
             SELECT event_type, d,
-                   CAST(CAST(xm AS VARCHAR) AS DOUBLE) / 1e6 AS x,
+                   CAST(CAST(xm AS STRING) AS DOUBLE) / 1e6 AS x,
                    CAST(COUNT(*) OVER w AS BIGINT) AS n,
-                   CAST(CAST(SUM(xm) OVER w AS VARCHAR) AS DOUBLE) / 1e6 AS sx,
-                   CAST(CAST(SUM(xm * xm) OVER w AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(xm) OVER w AS STRING) AS DOUBLE) / 1e6 AS sx,
+                   CAST(CAST(SUM(xm * xm) OVER w AS STRING) AS DOUBLE)
                        / 1e12 AS sxx
             FROM daily
             WINDOW w AS (PARTITION BY event_type ORDER BY d
@@ -1147,38 +1016,7 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     double→decimal tie-rounding of COMPUTED doubles, the volatility
     1-ulp bug class), and the final z arithmetic is IEEE-identical in
     both engines."""
-    MICRO = "decimal(30,0)"
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 1e6).cast(MICRO)).alias("xm")
-        )
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-7, -1)
-    )
-    stats = daily.select(
-        "event_type",
-        "d",
-        (F.col("xm").cast("double") / F.lit(1e6)).alias("x"),
-        F.count(F.lit(1)).over(w).alias("n"),
-        (F.sum("xm").over(w).cast("double") / F.lit(1e6)).alias("sx"),
-        (
-            F.sum(F.col("xm") * F.col("xm")).over(w).cast("double")
-            / F.lit(1e12)
-        ).alias("sxx"),
-    )
-    mean = F.col("sx") / F.col("n")
-    var = F.col("sxx") / F.col("n") - mean * mean
-    z = (F.col("x") - mean) / F.sqrt(var)
-    return (
-        stats.filter((F.col("n") >= 4) & (var > 0))
-        .select("event_type", "d", "x", z.alias("z"))
-        .filter(F.abs(F.col("z")) >= 2.0)
-    )
+    return run_sql(spark, sf_dir, "ts_anomaly_zscore")
 
 
 @register(
@@ -1578,7 +1416,7 @@ def ts_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM cum
         )
         SELECT event_type, d AS change_day, n_days,
-               CAST(CAST(cusum_num AS VARCHAR) AS DOUBLE) AS cusum_num
+               CAST(CAST(cusum_num AS STRING) AS DOUBLE) AS cusum_num
         FROM scored WHERE rk = 1
         ORDER BY event_type
     """,
@@ -1594,58 +1432,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines with zero float accumulation. Daily aggregation is
     map-side partial; the windows run partitioned by event_type over
     O(days) rows per series."""
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.groupBy(
-            "event_type", F.col("ts").cast("date").alias("d")
-        )
-        .agg(F.sum(F.col("value").cast(DEC)).cast(DEC).alias("x"))
-    )
-    stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum("x").cast(DEC).alias("total"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_rank = Window.partitionBy("event_type").orderBy("d")
-    cum = daily.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "d",
-        "n_days",
-        F.sum("x").over(w).cast(DEC).alias("p"),
-        F.row_number().over(w_rank).cast("long").alias("t"),
-        "total",
-    )
-    # re-cap factors so the product stays inside DECIMAL(38): without
-    # this DuckDB silently promotes the overflowing decimal multiply
-    # through DOUBLE (registry divergence class 3) while Spark truncates
-    # scale -- the engines would disagree in the last digits
-    score = F.col("p").cast("decimal(24,6)") * F.col("n_days").cast(
-        "decimal(12,0)"
-    ) - F.col("total").cast("decimal(24,6)") * F.col("t").cast("decimal(12,0)")
-    w_top = Window.partitionBy("event_type").orderBy(
-        F.abs(score).desc(), F.col("d").asc()
-    )
-    return (
-        cum.select(
-            "event_type",
-            "d",
-            "n_days",
-            score.alias("cusum_num"),
-            F.row_number().over(w_top).alias("rk"),
-        )
-        .filter(F.col("rk") == 1)
-        .select(
-            "event_type",
-            F.col("d").alias("change_day"),
-            "n_days",
-            F.col("cusum_num").cast("double").alias("cusum_num"),
-        )
-        .orderBy("event_type")
-    )
+    return run_sql(spark, sf_dir, "ts_changepoint_cusum")
 
 
 @register(
@@ -2111,34 +1898,7 @@ def ts_sequence_mining_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     are all |event_types|²-bounded, so everything after the window is
     broadcast-sized. Ties at identical timestamps break on event_id —
     deterministic in both engines."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = e.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).filter(F.col("next_type").isNotNull())
-    pairs = ordered.groupBy(
-        F.col("event_type").alias("a"), F.col("next_type").alias("b")
-    ).agg(F.count(F.lit(1)).alias("n_ab"))
-    froms = pairs.groupBy("a").agg(F.sum("n_ab").alias("n_a"))
-    tos = pairs.groupBy("b").agg(F.sum("n_ab").alias("n_b"))
-    tot = pairs.agg(F.sum("n_ab").alias("n"))
-    return (
-        pairs.join(F.broadcast(froms), "a")
-        .join(F.broadcast(tos), "b")
-        .join(F.broadcast(tot))
-        .select(
-            "a",
-            "b",
-            "n_ab",
-            (F.col("n_ab").cast("double") / F.col("n_a")).alias("confidence"),
-            (
-                F.col("n_ab").cast("double") * F.col("n")
-                / (F.col("n_a").cast("double") * F.col("n_b"))
-            ).alias("lift"),
-        )
-        .orderBy(F.col("n_ab").desc(), "a", "b")
-        .limit(20)
-    )
+    return run_sql(spark, sf_dir, "ts_sequence_mining_pairs")
 
 
 @register(
@@ -2264,8 +2024,8 @@ def ts_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         hits AS (
             SELECT event_type, d,
-                   CAST(CAST(y AS VARCHAR) AS DOUBLE) AS day_value,
-                   CAST(CAST(y - y1 AS VARCHAR) AS DOUBLE) AS rebound
+                   CAST(CAST(y AS STRING) AS DOUBLE) AS day_value,
+                   CAST(CAST(y - y1 AS STRING) AS DOUBLE) AS rebound
             FROM steps
             WHERE y2 IS NOT NULL AND y1 < y2 AND y > y1
         )
@@ -2288,33 +2048,7 @@ def ts_pattern_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
     dates are exact; rebound sums ride DECIMAL. Per-series windows are
     calendar-bounded — the pattern scan adds no shuffle beyond the
     daily rollup's."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast(DEC)).alias("y"))
-    w = Window.partitionBy("event_type").orderBy("d")
-    steps = daily.select(
-        "event_type",
-        "d",
-        "y",
-        F.lag("y", 2).over(w).alias("y2"),
-        F.lag("y", 1).over(w).alias("y1"),
-    )
-    hits = steps.filter(
-        F.col("y2").isNotNull()
-        & (F.col("y1") < F.col("y2"))
-        & (F.col("y") > F.col("y1"))
-    ).select(
-        "event_type",
-        "d",
-        (F.col("y") - F.col("y1")).alias("rebound"),
-    )
-    return hits.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_reversals"),
-        F.min("d").alias("first_reversal"),
-        F.max("d").alias("last_reversal"),
-        F.sum(F.col("rebound")).cast("double").alias("total_rebound"),
-    )
+    return run_sql(spark, sf_dir, "ts_pattern_reversal")
 
 
 # ---------------------------------------------------------------------------
@@ -2821,54 +2555,7 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical-order IEEE edges. PACF cutting off after lag p is the
     textbook AR(p) identification signal; pacf2 here equals the AR(2)
     fit's phi2 exactly (shared estimator, pinned in tests)."""
-    daily = event_daily(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagged = daily.select(
-        "event_type",
-        "x",
-        F.lag("x", 1).over(w).alias("x1"),
-        F.lag("x", 2).over(w).alias("x2"),
-        F.lag("x", 3).over(w).alias("x3"),
-    )
-    def dsum_d(col):
-        return F.sum(col).cast("double")
-
-    s = lagged.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum_d(F.col("x")).alias("sx"),
-        dsum_d(F.col("x") * F.col("x")).alias("sxx"),
-        dsum_d(F.col("x") * F.col("x1")).alias("s01"),
-        dsum_d(F.col("x") * F.col("x2")).alias("s02"),
-        dsum_d(F.col("x") * F.col("x3")).alias("s03"),
-        dsum_d(F.when(F.col("x1").isNotNull(), F.col("x"))).alias("a1"),
-        dsum_d(F.col("x1")).alias("b1"),
-        dsum_d(F.when(F.col("x2").isNotNull(), F.col("x"))).alias("a2"),
-        dsum_d(F.col("x2")).alias("b2"),
-        dsum_d(F.when(F.col("x3").isNotNull(), F.col("x"))).alias("a3"),
-        dsum_d(F.col("x3")).alias("b3"),
-    )
-    n = F.col("n").cast("double")
-    mu = F.col("sx") / n
-    c0 = (F.col("sxx") - F.col("sx") * F.col("sx") / n) / n
-    def ck(sk, ak, bk, k):
-        return (sk - mu * (ak + bk) + (n - F.lit(float(k))) * mu * mu) / n
-
-    c1 = ck(F.col("s01"), F.col("a1"), F.col("b1"), 1)
-    c2 = ck(F.col("s02"), F.col("a2"), F.col("b2"), 2)
-    c3 = ck(F.col("s03"), F.col("a3"), F.col("b3"), 3)
-    r1, r2, r3 = c1 / c0, c2 / c0, c3 / c0
-    pacf2 = (r2 - r1 * r1) / (F.lit(1.0) - r1 * r1)
-    phi21 = r1 * (F.lit(1.0) - pacf2)
-    pacf3 = (r3 - phi21 * r2 - pacf2 * r1) / (
-        F.lit(1.0) - phi21 * r1 - pacf2 * r2
-    )
-    return s.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n_days"),
-        r1.alias("pacf1"),
-        pacf2.alias("pacf2"),
-        pacf3.alias("pacf3"),
-    ).orderBy("event_type")
+    return run_sql(spark, sf_dir, "ts_pacf")
 
 
 @register(
@@ -3134,76 +2821,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-tied Var=0 degenerate (Spark NULL vs DuckDB IEEE divergence
     class). Same O(days²)-per-series pair join and one-scan daily
     collapse as ts_theil_sen."""
-    daily = daily_scaled(spark, sf_dir)
-    n = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    a = daily.select(
-        "event_type", F.col("day").alias("d1"), F.col("v").alias("v1")
-    )
-    b = daily.select(
-        F.col("event_type").alias("et2"),
-        F.col("day").alias("d2"),
-        F.col("v").alias("v2"),
-    )
-    s = (
-        a.join(
-            b,
-            (F.col("event_type") == F.col("et2"))
-            & (F.col("d2") > F.col("d1")),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum(
-                F.when(F.col("v2") > F.col("v1"), 1)
-                .when(F.col("v2") < F.col("v1"), -1)
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("s")
-        )
-    )
-    ties = (
-        daily.groupBy("event_type", "v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
-        .filter(F.col("t") > 1)
-        .groupBy("event_type")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-                ),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("tie_num")
-        )
-    )
-    red = (
-        n.join(s, "event_type")
-        .join(ties, "event_type", "left")
-        .select(
-            "event_type",
-            "n",
-            "s",
-            (
-                F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
-                - F.coalesce(F.col("tie_num"), F.lit(0))
-            ).alias("var18"),
-        )
-    )
-    sd = F.sqrt(F.col("var18").cast("double") / F.lit(18).cast("double"))
-    return red.select(
-        "event_type",
-        "n",
-        F.col("s").alias("s_stat"),
-        F.col("var18").cast("bigint").alias("var_s_x18"),
-        F.when(F.col("var18") == 0, F.lit(None).cast("double"))
-        .when(F.col("s") > 0, (F.col("s") - 1).cast("double") / sd)
-        .when(F.col("s") < 0, (F.col("s") + 1).cast("double") / sd)
-        .otherwise(F.lit(0.0))
-        .alias("z_stat"),
-    ).orderBy("event_type")
+    return run_sql(spark, sf_dir, "ts_mann_kendall")
 
 
 @register(
@@ -3228,29 +2846,29 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         sums AS (
             SELECT y_type, x_type,
                    CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(CAST(yt AS DECIMAL(38,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(yt AS DECIMAL(38,0))) AS STRING)
                         AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(CAST(y1 AS DECIMAL(38,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(y1 AS DECIMAL(38,0))) AS STRING)
                         AS DOUBLE) AS sy1,
-                   CAST(CAST(SUM(CAST(x1 AS DECIMAL(38,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(x1 AS DECIMAL(38,0))) AS STRING)
                         AS DOUBLE) AS sx1,
                    CAST(CAST(SUM(CAST(yt AS DECIMAL(19,0))
-                        * CAST(yt AS DECIMAL(19,0))) AS VARCHAR)
+                        * CAST(yt AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS syy,
                    CAST(CAST(SUM(CAST(yt AS DECIMAL(19,0))
-                        * CAST(y1 AS DECIMAL(19,0))) AS VARCHAR)
+                        * CAST(y1 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS syy1,
                    CAST(CAST(SUM(CAST(yt AS DECIMAL(19,0))
-                        * CAST(x1 AS DECIMAL(19,0))) AS VARCHAR)
+                        * CAST(x1 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS syx1,
                    CAST(CAST(SUM(CAST(y1 AS DECIMAL(19,0))
-                        * CAST(y1 AS DECIMAL(19,0))) AS VARCHAR)
+                        * CAST(y1 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS sy1y1,
                    CAST(CAST(SUM(CAST(x1 AS DECIMAL(19,0))
-                        * CAST(x1 AS DECIMAL(19,0))) AS VARCHAR)
+                        * CAST(x1 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS sx1x1,
                    CAST(CAST(SUM(CAST(y1 AS DECIMAL(19,0))
-                        * CAST(x1 AS DECIMAL(19,0))) AS VARCHAR)
+                        * CAST(x1 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS sy1x1
             FROM triples GROUP BY y_type, x_type
         ),
@@ -3299,87 +2917,7 @@ def ts_granger_causality_1lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-guard identically on both engines. Scale: O(types²) pairs of
     O(days) rows after the collapse; nothing corpus-sized crosses the
     pair join."""
-    daily = daily_scaled(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagged = daily.select(
-        "event_type", "day", "v", F.lag("v").over(w).alias("v1")
-    ).filter(F.col("v1").isNotNull())
-    y = lagged.select(
-        F.col("event_type").alias("y_type"),
-        "day",
-        F.col("v").alias("yt"),
-        F.col("v1").alias("y1"),
-    )
-    x = lagged.select(
-        F.col("event_type").alias("x_type"),
-        F.col("day").alias("xday"),
-        F.col("v1").alias("x1"),
-    )
-    triples = y.join(
-        x,
-        (F.col("xday") == F.col("day"))
-        & (F.col("x_type") != F.col("y_type")),
-    )
-    d19 = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    sums = triples.groupBy("y_type", "x_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(d38("yt")).cast("double").alias("sy"),
-        F.sum(d38("y1")).cast("double").alias("sy1"),
-        F.sum(d38("x1")).cast("double").alias("sx1"),
-        F.sum(d19("yt") * d19("yt")).cast("double").alias("syy"),
-        F.sum(d19("yt") * d19("y1")).cast("double").alias("syy1"),
-        F.sum(d19("yt") * d19("x1")).cast("double").alias("syx1"),
-        F.sum(d19("y1") * d19("y1")).cast("double").alias("sy1y1"),
-        F.sum(d19("x1") * d19("x1")).cast("double").alias("sx1x1"),
-        F.sum(d19("y1") * d19("x1")).cast("double").alias("sy1x1"),
-    )
-    nd = F.col("n").cast("double")
-    cen = sums.select(
-        "y_type",
-        "x_type",
-        "n",
-        (F.col("syy") - F.col("sy") * F.col("sy") / nd).alias("cyy"),
-        (F.col("syy1") - F.col("sy") * F.col("sy1") / nd).alias("cyy1"),
-        (F.col("syx1") - F.col("sy") * F.col("sx1") / nd).alias("cyx1"),
-        (F.col("sy1y1") - F.col("sy1") * F.col("sy1") / nd).alias("cy1y1"),
-        (F.col("sx1x1") - F.col("sx1") * F.col("sx1") / nd).alias("cx1x1"),
-        (F.col("sy1x1") - F.col("sy1") * F.col("sx1") / nd).alias("cy1x1"),
-    )
-    det = F.col("cy1y1") * F.col("cx1x1") - F.col("cy1x1") * F.col("cy1x1")
-    b = (
-        F.col("cyy1") * F.col("cx1x1") - F.col("cyx1") * F.col("cy1x1")
-    ) / det
-    c = (
-        F.col("cyx1") * F.col("cy1y1") - F.col("cyy1") * F.col("cy1x1")
-    ) / det
-    fit = cen.select(
-        "y_type",
-        "x_type",
-        "n",
-        det.alias("det"),
-        (F.col("cyy") - F.col("cyy1") * F.col("cyy1") / F.col("cy1y1")).alias(
-            "rss_r"
-        ),
-        (F.col("cyy") - b * F.col("cyy1") - c * F.col("cyx1")).alias("rss_u"),
-    )
-    return fit.select(
-        F.col("x_type").alias("cause"),
-        F.col("y_type").alias("effect"),
-        "n",
-        "rss_r",
-        "rss_u",
-        F.when(
-            (F.col("det") == F.lit(0.0)) | (F.col("rss_u") <= F.lit(0.0)),
-            F.lit(None).cast("double"),
-        )
-        .otherwise(
-            (F.col("rss_r") - F.col("rss_u"))
-            * (F.col("n") - 3).cast("double")
-            / F.col("rss_u")
-        )
-        .alias("f_stat"),
-    ).orderBy("cause", "effect")
+    return run_sql(spark, sf_dir, "ts_granger_causality_1lag")
 
 
 # ---------------------------------------------------------------------------
@@ -3549,10 +3087,10 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         roll AS (
             SELECT event_type, rn,
-                   CAST(CAST(x AS VARCHAR) AS DOUBLE) AS xd,
+                   CAST(CAST(x AS STRING) AS DOUBLE) AS xd,
                    CAST(COUNT(*) OVER w AS BIGINT) AS wn,
-                   CAST(CAST(SUM(x) OVER w AS VARCHAR) AS DOUBLE) AS ws,
-                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) OVER w AS VARCHAR) AS DOUBLE) AS wq
+                   CAST(CAST(SUM(x) OVER w AS STRING) AS DOUBLE) AS ws,
+                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) OVER w AS STRING) AS DOUBLE) AS wq
             FROM daily
             WINDOW w AS (PARTITION BY event_type ORDER BY rn
                          ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
@@ -3585,51 +3123,7 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series SUM is exact integer arithmetic — no double folds
     anywhere. Windows partition by series over the 30-row daily
     aggregate; corpus-scale work is one map-side-combining agg."""
-    daily = event_daily_rn(spark, sf_dir)
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("rn")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    roll = daily.select(
-        "event_type",
-        "rn",
-        as_d(F.col("x")).alias("xd"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("wn"),
-        as_d(F.sum("x").over(w)).alias("ws"),
-        as_d(F.sum(F.col("x") * F.col("x")).over(w)).alias("wq"),
-    )
-    wnd = F.col("wn").cast("double")
-    bands = roll.filter(F.col("wn") == 7).select(
-        "event_type",
-        "xd",
-        (F.col("ws") / wnd).alias("mid"),
-        F.sqrt(
-            (F.col("wq") - F.col("ws") * F.col("ws") / wnd) / wnd
-        ).alias("sigma"),
-    )
-    return (
-        bands.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_days"),
-            F.sum(
-                F.when(
-                    F.col("xd") > F.col("mid") + 2 * F.col("sigma"), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_upper"),
-            F.sum(
-                F.when(
-                    F.col("xd") < F.col("mid") - 2 * F.col("sigma"), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_lower"),
-            lsum(F.lit(4.0) * F.col("sigma")).alias("bandwidth_q6_sum"),
-        )
-        .orderBy("event_type")
-    )
+    return run_sql(spark, sf_dir, "ts_bollinger_bands")
 
 
 # ---------------------------------------------------------------------------
@@ -3887,17 +3381,17 @@ def ts_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         seas AS (
             SELECT event_type, dow,
                    CAST(COUNT(*) AS BIGINT) AS c,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(ws) AS VARCHAR) AS DOUBLE) AS sws
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(ws) AS STRING) AS DOUBLE) AS sws
             FROM trend GROUP BY event_type, dow
         )
         SELECT t.event_type, t.d, t.dow,
-               CAST(CAST(t.x AS VARCHAR) AS DOUBLE) AS x,
-               CAST(CAST(t.ws AS VARCHAR) AS DOUBLE) / 7 AS trend,
+               CAST(CAST(t.x AS STRING) AS DOUBLE) AS x,
+               CAST(CAST(t.ws AS STRING) AS DOUBLE) / 7 AS trend,
                s.sx / CAST(s.c AS DOUBLE)
                  - s.sws / (7 * CAST(s.c AS DOUBLE)) AS seasonal,
-               CAST(CAST(t.x AS VARCHAR) AS DOUBLE)
-                 - CAST(CAST(t.ws AS VARCHAR) AS DOUBLE) / 7
+               CAST(CAST(t.x AS STRING) AS DOUBLE)
+                 - CAST(CAST(t.ws AS STRING) AS DOUBLE) / 7
                  - (s.sx / CAST(s.c AS DOUBLE)
                     - s.sws / (7 * CAST(s.c AS DOUBLE))) AS residual
         FROM trend t JOIN seas s
@@ -3916,63 +3410,7 @@ def ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-day mod 7 (both engines' named dow functions disagree on
     numbering). Windows partition per series over calendar-bounded
     rows; corpus work is one map-side-combining daily agg."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.col("ts").cast("date").alias("d"),
-    ).agg(
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("x")
-    ).withColumn(
-        "dow",
-        (
-            F.datediff(F.col("d"), F.lit("1970-01-01").cast("date")).cast("bigint")
-            % 7
-        ),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-3, 3)
-    )
-    tr = daily.select(
-        "event_type",
-        "d",
-        "dow",
-        "x",
-        F.count(F.lit(1)).over(w).cast("bigint").alias("wn"),
-        F.sum("x").over(w).cast("decimal(38,6)").alias("ws"),
-    )
-    trend = tr.filter(F.col("wn") == 7)
-    seas = trend.groupBy("event_type", "dow").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c"),
-        as_d(F.sum("x")).alias("sx"),
-        as_d(F.sum("ws")).alias("sws"),
-    )
-    cd = F.col("c").cast("double")
-    seasonal = F.col("sx") / cd - F.col("sws") / (F.lit(7.0) * cd)
-    s2 = seas.select(
-        F.col("event_type").alias("et_s"),
-        F.col("dow").alias("dow_s"),
-        seasonal.alias("seasonal"),
-    )
-    xd = as_d(F.col("x"))
-    trd = as_d(F.col("ws")) / F.lit(7.0)
-    return (
-        trend.join(
-            F.broadcast(s2),
-            (F.col("event_type") == F.col("et_s")) & (F.col("dow") == F.col("dow_s")),
-        )
-        .select(
-            "event_type",
-            "d",
-            "dow",
-            xd.alias("x"),
-            trd.alias("trend"),
-            "seasonal",
-            (xd - trd - F.col("seasonal")).alias("residual"),
-        )
-        .orderBy("event_type", "d")
-    )
+    return run_sql(spark, sf_dir, "ts_stl_decompose")
 
 
 @register(
@@ -4135,8 +3573,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition per series over calendar-bounded rows; corpus work is
     one map-side-combining daily agg. This is the screening pass a
     monitoring pipeline runs before fitting anything heavier."""
-    daily = event_daily_xq(spark, sf_dir)
-    return cusum_changepoint(daily)
+    return run_sql(spark, sf_dir, "ts_cusum_changepoint")
 
 
 @register(
@@ -4151,7 +3588,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         st AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx
             FROM daily GROUP BY event_type
         ),
         lagged AS (
@@ -4161,14 +3598,14 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             WINDOW w AS (PARTITION BY event_type ORDER BY d)
         )
         SELECT l.event_type, l.d,
-               CAST(CAST(l.x AS VARCHAR) AS DOUBLE) AS x,
+               CAST(CAST(l.x AS STRING) AS DOUBLE) AS x,
                CAST(CAST(CASE WHEN l.xp >= l.xn THEN l.x - l.xp
-                              ELSE l.x - l.xn END AS VARCHAR) AS DOUBLE)
+                              ELSE l.x - l.xn END AS STRING) AS DOUBLE)
                    AS prominence
         FROM lagged l JOIN st ON st.event_type = l.event_type
         WHERE l.xp IS NOT NULL AND l.xn IS NOT NULL
           AND l.x > l.xp AND l.x > l.xn
-          AND CAST(CAST(l.x AS VARCHAR) AS DOUBLE)
+          AND CAST(CAST(l.x AS STRING) AS DOUBLE)
               > st.sx / CAST(st.n AS DOUBLE)
         ORDER BY l.event_type, l.d
     """,
@@ -4181,44 +3618,7 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed presentation cast. Lag/lead windows partition per series
     over calendar-bounded rows; the corpus collapses in the first
     agg."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.col("ts").cast("date").alias("d")).agg(
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("x")
-    )
-    st = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum("x")).alias("sx"),
-    )
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagged = daily.select(
-        "event_type",
-        "d",
-        "x",
-        F.lag("x").over(w).alias("xp"),
-        F.lead("x").over(w).alias("xn"),
-    )
-    stj = st.select(F.col("event_type").alias("et_s"), "n", "sx")
-    return (
-        lagged.join(F.broadcast(stj), F.col("event_type") == F.col("et_s"))
-        .filter(
-            F.col("xp").isNotNull()
-            & F.col("xn").isNotNull()
-            & (F.col("x") > F.col("xp"))
-            & (F.col("x") > F.col("xn"))
-            & (as_d(F.col("x")) > F.col("sx") / F.col("n").cast("double"))
-        )
-        .select(
-            "event_type",
-            "d",
-            as_d(F.col("x")).alias("x"),
-            as_d(
-                F.when(
-                    F.col("xp") >= F.col("xn"), F.col("x") - F.col("xp")
-                ).otherwise(F.col("x") - F.col("xn"))
-            ).alias("prominence"),
-        )
-        .orderBy("event_type", "d")
-    )
+    return run_sql(spark, sf_dir, "ts_peak_detection")
 
 
 @register(
@@ -4459,55 +3859,7 @@ def ts_forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition per series; the corpus collapses in the first agg. This
     is the eval harness any forecasting pipeline runs before shipping
     a model fancier than the naive baseline."""
-    daily = event_daily_xq(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("rn")
-    lagged = daily.select(
-        "event_type",
-        "xq",
-        F.lag("xq", 7).over(w).alias("x7"),
-        F.lag("xq", 1).over(w).alias("x1"),
-    )
-    has7 = F.col("x7").isNotNull()
-    has1 = F.col("x1").isNotNull()
-    smape_term = (
-        F.floor(
-            F.lit(2.0)
-            * F.abs(F.col("xq") - F.col("x7")).cast("double")
-            / (
-                F.abs(F.col("xq").cast("double"))
-                + F.abs(F.col("x7").cast("double"))
-            )
-            * F.lit(1e9)
-        )
-        .cast("bigint")
-    )
-    err = lagged.groupBy("event_type").agg(
-        F.sum(F.when(has7, 1).otherwise(0)).cast("bigint").alias("n_f"),
-        F.sum(F.when(has7, F.abs(F.col("xq") - F.col("x7"))).otherwise(0))
-        .cast("bigint")
-        .alias("se"),
-        F.sum(F.when(has1, 1).otherwise(0)).cast("bigint").alias("n_d"),
-        F.sum(F.when(has1, F.abs(F.col("xq") - F.col("x1"))).otherwise(0))
-        .cast("bigint")
-        .alias("sd"),
-        F.sum(F.when(has7, smape_term).otherwise(0))
-        .cast("bigint")
-        .alias("smape_q9_sum"),
-    )
-    nf = F.col("n_f").cast("double")
-    nd_ = F.col("n_d").cast("double")
-    return err.select(
-        "event_type",
-        "n_f",
-        (F.col("se").cast("double") / nf / F.lit(1e6)).alias("seasonal_mae"),
-        (F.col("sd").cast("double") / nd_ / F.lit(1e6)).alias("naive_mae"),
-        F.when(
-            F.col("sd") > 0,
-            (F.col("se").cast("double") / nf)
-            / (F.col("sd").cast("double") / nd_),
-        ).alias("mase"),
-        (F.col("smape_q9_sum").cast("double") / nf / F.lit(1e9)).alias("smape"),
-    ).orderBy("event_type")
+    return run_sql(spark, sf_dir, "ts_forecast_backtest_mase")
 
 
 @register(
@@ -4553,43 +3905,7 @@ def ts_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts with one share division. The 100-TB version swaps the band
     join for the repo's asof_join operator unchanged; the fixture's
     30-day horizon keeps per-user fan-in bounded here."""
-    e = load_table(spark, sf_dir, "events")
-    buys = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"), F.col("event_id").alias("buy_id"), F.col("ts").alias("buy_ts")
-    )
-    touches = e.filter(F.col("event_type").isin("view", "click")).select(
-        F.col("user_id"),
-        F.col("event_type").alias("channel"),
-        F.col("ts").alias("touch_ts"),
-    )
-    attrib = buys.join(touches, "user_id").filter(
-        (F.col("touch_ts") < F.col("buy_ts"))
-        & (F.col("touch_ts") >= F.col("buy_ts") - F.expr("INTERVAL 7 DAY"))
-    )
-    w = Window.partitionBy("buy_id").orderBy(
-        F.col("touch_ts").desc(), F.col("channel")
-    )
-    last_t = (
-        attrib.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("buy_id", "channel")
-    )
-    tot = buys.agg(F.count(F.lit(1)).cast("bigint").alias("n_buys"))
-    return (
-        last_t.crossJoin(F.broadcast(tot))
-        .groupBy("channel", "n_buys")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_attributed"))
-        .select(
-            "channel",
-            "n_attributed",
-            "n_buys",
-            (
-                F.col("n_attributed").cast("double")
-                / F.col("n_buys").cast("double")
-            ).alias("share_of_purchases"),
-        )
-        .orderBy("channel")
-    )
+    return run_sql(spark, sf_dir, "ts_attribution_last_touch")
 
 
 @register(
@@ -5016,7 +4332,7 @@ def ts_kpss_level(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM cums
         )
         SELECT event_type, d,
-               CAST(CAST(cum - LEAST(run_min, 0) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(cum - LEAST(run_min, 0) AS STRING) AS DOUBLE)
                  / (2 * CAST(n AS DOUBLE) * 1e6) AS cusum_hi,
                (cum - LEAST(run_min, 0)
                 > CAST(8 AS DECIMAL(38,0)) * n * 1000000) AS alarm
@@ -5036,44 +4352,7 @@ def ts_cusum_tabular(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison at h = 8 units. The recursion-to-prefix-identity is the
     same trick as ts_cusum_changepoint's scaling — no fold, no UDF, no
     state."""
-    daily = event_daily_xq(spark, sf_dir)
-    st = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("xq").cast("bigint").alias("sx"),
-    )
-    stj = st.select(F.col("event_type").alias("et_s"), "n", "sx")
-    z = daily.join(F.broadcast(stj), F.col("event_type") == F.col("et_s")).select(
-        "event_type",
-        "d",
-        "rn",
-        "n",
-        (
-            F.lit(2).cast("decimal(38,0)") * F.col("n") * F.col("xq")
-            - 3 * F.col("sx").cast("decimal(38,0)")
-        ).alias("zk"),
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("rn")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    pre = z.withColumn("cum", F.sum("zk").over(wcum).cast("decimal(38,0)"))
-    pre = pre.withColumn(
-        "run_min", F.min("cum").over(wcum).cast("decimal(38,0)")
-    )
-    c_hi = F.col("cum") - F.least(F.col("run_min"), F.lit(0).cast("decimal(38,0)"))
-    return pre.select(
-        "event_type",
-        "d",
-        (
-            c_hi.cast("string").cast("double")
-            / (2 * F.col("n").cast("double") * F.lit(1e6))
-        ).alias("cusum_hi"),
-        (
-            c_hi
-            > F.lit(8).cast("decimal(38,0)") * F.col("n") * 1000000
-        ).alias("alarm"),
-    ).orderBy("event_type", "d")
+    return run_sql(spark, sf_dir, "ts_cusum_tabular")
 
 
 @register(
@@ -5213,39 +4492,7 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation; z is one guarded sqrt edge (n<3 NULLs — no interior
     points). Lag/lead windows partition per series over
     calendar-bounded rows; corpus work is the one daily agg."""
-    daily = daily_scaled(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagged = daily.select(
-        "event_type",
-        "v",
-        F.lag("v").over(w).alias("vp"),
-        F.lead("v").over(w).alias("vn"),
-    )
-    is_turn = (
-        F.col("vp").isNotNull()
-        & F.col("vn").isNotNull()
-        & (
-            ((F.col("v") > F.col("vp")) & (F.col("v") > F.col("vn")))
-            | ((F.col("v") < F.col("vp")) & (F.col("v") < F.col("vn")))
-        )
-    )
-    s = lagged.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(is_turn, 1).otherwise(0)).cast("bigint").alias("t"),
-    )
-    n_d = F.col("n").cast("double")
-    exp_t = (2 * (F.col("n") - 2)).cast("double") / 3
-    return s.select(
-        "event_type",
-        "n",
-        "t",
-        exp_t.alias("expected_t"),
-        F.when(
-            F.col("n") >= 3,
-            (F.col("t").cast("double") - exp_t)
-            / F.sqrt((16 * n_d - 29) / 90),
-        ).alias("z_stat"),
-    ).orderBy("event_type")
+    return run_sql(spark, sf_dir, "ts_turning_points")
 
 
 @register(
@@ -5668,18 +4915,18 @@ def ts_calendar_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS DECIMAL(38,0)) AS abs_err_cents,
                    2 * CAST(CAST(ABS(CAST(y AS DECIMAL(18,2)) * 100
                             - CAST(yhat AS DECIMAL(18,2)) * 100)
-                            AS VARCHAR) AS DOUBLE)
+                            AS STRING) AS DOUBLE)
                      / (CAST(CAST(CAST(y AS DECIMAL(18,2)) * 100
-                             AS VARCHAR) AS DOUBLE)
+                             AS STRING) AS DOUBLE)
                         + CAST(CAST(CAST(yhat AS DECIMAL(18,2)) * 100
-                               AS VARCHAR) AS DOUBLE)) AS smape_term
+                               AS STRING) AS DOUBLE)) AS smape_term
             FROM fc WHERE yhat IS NOT NULL
         )
         SELECT segment,
                CAST(COUNT(*) AS BIGINT) AS n_eval,
-               CAST(CAST(SUM(abs_err_cents) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(SUM(abs_err_cents) AS STRING) AS DOUBLE)
                  / CAST(CAST(SUM(CAST(CAST(y AS DECIMAL(18,2)) * 100
-                        AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS wape,
+                        AS DECIMAL(38,0))) AS STRING) AS DOUBLE) AS wape,
                {o_fsum('smape_term', 9)} / COUNT(*) AS smape
         FROM ev GROUP BY segment
         ORDER BY segment
@@ -5698,46 +4945,7 @@ def ts_wape_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are those with a 7-day-old same-weekday observation.
     Denominator degeneracy (all-zero actuals) is impossible on this
     fixture (positive prices, documented)."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d")
-    fc = daily.select(
-        "segment",
-        "d",
-        F.col("x").alias("y"),
-        F.lag("x", 7).over(w).alias("yhat"),
-    ).filter(F.col("yhat").isNotNull())
-    y_c = (F.col("y").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
-    yh_c = (F.col("yhat").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
-    abs_err = F.abs(y_c - yh_c).cast("decimal(38,0)")
-    smape_term = 2 * as_d(abs_err) / (as_d(y_c) + as_d(yh_c))
-    ev = fc.select(
-        "segment",
-        y_c.alias("y_cents"),
-        abs_err.alias("abs_err_cents"),
-        smape_term.alias("smape_term"),
-    )
-    return (
-        ev.groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_eval"),
-            (
-                as_d(F.sum("abs_err_cents").cast("decimal(38,0)"))
-                / as_d(F.sum("y_cents").cast("decimal(38,0)"))
-            ).alias("wape"),
-            (
-                as_d(
-                    F.sum(
-                        F.floor(F.col("smape_term") * F.lit(1e9)).cast(
-                            "decimal(38,0)"
-                        )
-                    ).cast("decimal(38,0)")
-                )
-                / F.lit(1e9)
-                / F.count(F.lit(1))
-            ).alias("smape"),
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "ts_wape_smape")
 
 
 @register(
@@ -5769,38 +4977,38 @@ def ts_wape_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM pairs GROUP BY segment
         )
         SELECT segment, n,
-               (CAST(n AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-                - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                  * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
-               / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-                  - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                    * CAST(CAST(sx AS VARCHAR) AS DOUBLE)) AS beta,
+               (CAST(n AS DOUBLE) * CAST(CAST(sxy AS STRING) AS DOUBLE)
+                - CAST(CAST(sx AS STRING) AS DOUBLE)
+                  * CAST(CAST(sy AS STRING) AS DOUBLE))
+               / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS STRING) AS DOUBLE)
+                  - CAST(CAST(sx AS STRING) AS DOUBLE)
+                    * CAST(CAST(sx AS STRING) AS DOUBLE)) AS beta,
                CASE WHEN n > 2 THEN
-                 ((CAST(n AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-                   - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                     * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
-                  / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-                     - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                       * CAST(CAST(sx AS VARCHAR) AS DOUBLE)))
+                 ((CAST(n AS DOUBLE) * CAST(CAST(sxy AS STRING) AS DOUBLE)
+                   - CAST(CAST(sx AS STRING) AS DOUBLE)
+                     * CAST(CAST(sy AS STRING) AS DOUBLE))
+                  / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS STRING) AS DOUBLE)
+                     - CAST(CAST(sx AS STRING) AS DOUBLE)
+                       * CAST(CAST(sx AS STRING) AS DOUBLE)))
                  / sqrt(
-                     ((CAST(CAST(syy AS VARCHAR) AS DOUBLE)
-                       - CAST(CAST(sy AS VARCHAR) AS DOUBLE)
-                         * CAST(CAST(sy AS VARCHAR) AS DOUBLE) / n)
+                     ((CAST(CAST(syy AS STRING) AS DOUBLE)
+                       - CAST(CAST(sy AS STRING) AS DOUBLE)
+                         * CAST(CAST(sy AS STRING) AS DOUBLE) / n)
                       - ((CAST(n AS DOUBLE)
-                          * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-                          - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                            * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
+                          * CAST(CAST(sxy AS STRING) AS DOUBLE)
+                          - CAST(CAST(sx AS STRING) AS DOUBLE)
+                            * CAST(CAST(sy AS STRING) AS DOUBLE))
                          / (CAST(n AS DOUBLE)
-                            * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-                            - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                              * CAST(CAST(sx AS VARCHAR) AS DOUBLE)))
-                        * (CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-                           - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                             * CAST(CAST(sy AS VARCHAR) AS DOUBLE) / n))
+                            * CAST(CAST(sxx AS STRING) AS DOUBLE)
+                            - CAST(CAST(sx AS STRING) AS DOUBLE)
+                              * CAST(CAST(sx AS STRING) AS DOUBLE)))
+                        * (CAST(CAST(sxy AS STRING) AS DOUBLE)
+                           - CAST(CAST(sx AS STRING) AS DOUBLE)
+                             * CAST(CAST(sy AS STRING) AS DOUBLE) / n))
                      / (n - 2)
-                     / (CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-                        - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                          * CAST(CAST(sx AS VARCHAR) AS DOUBLE) / n))
+                     / (CAST(CAST(sxx AS STRING) AS DOUBLE)
+                        - CAST(CAST(sx AS STRING) AS DOUBLE)
+                          * CAST(CAST(sx AS STRING) AS DOUBLE) / n))
                END AS df_stat
         FROM s ORDER BY segment
     """,
@@ -5817,54 +5025,7 @@ def ts_dickey_fuller_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form with no per-row doubles at all. Class-5: df_stat
     NULLs for n <= 2; Sxx_centered > 0 holds on any series with two
     distinct levels (fixture contract, all SFs)."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d")
-    pairs = (
-        daily.withColumn("xp", F.lag("x").over(w))
-        .filter(F.col("xp").isNotNull())
-        .select(
-            "segment",
-            (
-                (F.col("x").cast("decimal(18,2)") * 100)
-                - (F.col("xp").cast("decimal(18,2)") * 100)
-            )
-            .cast("bigint")
-            .alias("dy"),
-            (F.col("xp").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("xl"),
-        )
-    )
-    s = pairs.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("xl").cast("decimal(38,0)").alias("sx"),
-        F.sum("dy").cast("decimal(38,0)").alias("sy"),
-        F.sum(F.col("xl").cast("decimal(38,0)") * F.col("xl"))
-        .cast("decimal(38,0)")
-        .alias("sxx"),
-        F.sum(F.col("xl").cast("decimal(38,0)") * F.col("dy"))
-        .cast("decimal(38,0)")
-        .alias("sxy"),
-        F.sum(F.col("dy").cast("decimal(38,0)") * F.col("dy"))
-        .cast("decimal(38,0)")
-        .alias("syy"),
-    )
-    n_d = F.col("n").cast("double")
-    sx, sy = as_d(F.col("sx")), as_d(F.col("sy"))
-    sxx, sxy, syy = (
-        as_d(F.col("sxx")),
-        as_d(F.col("sxy")),
-        as_d(F.col("syy")),
-    )
-    beta = (n_d * sxy - sx * sy) / (n_d * sxx - sx * sx)
-    sse = (syy - sy * sy / F.col("n")) - beta * (sxy - sx * sy / F.col("n"))
-    se2 = sse / (F.col("n") - 2) / (sxx - sx * sx / F.col("n"))
-    return s.select(
-        "segment",
-        "n",
-        beta.alias("beta"),
-        F.when(F.col("n") > 2, beta / F.sqrt(se2)).alias("df_stat"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "ts_dickey_fuller_stat")
 
 
 @register(
@@ -5989,24 +5150,24 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM cents GROUP BY segment
         )
         SELECT segment, n_pre, n_post,
-               CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre / 100
+               CAST(CAST(s_pre AS STRING) AS DOUBLE) / n_pre / 100
                    AS pre_mean,
-               CAST(CAST(s_post AS VARCHAR) AS DOUBLE) / n_post / 100
+               CAST(CAST(s_post AS STRING) AS DOUBLE) / n_post / 100
                    AS post_mean,
-               (CAST(CAST(s_post AS VARCHAR) AS DOUBLE) / n_post)
-                 / (CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre) - 1
+               (CAST(CAST(s_post AS STRING) AS DOUBLE) / n_post)
+                 / (CAST(CAST(s_pre AS STRING) AS DOUBLE) / n_pre) - 1
                    AS lift,
                CASE WHEN n_pre > 1 AND n_post > 1 THEN
-                 (CAST(CAST(s_post AS VARCHAR) AS DOUBLE) / n_post
-                  - CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre)
+                 (CAST(CAST(s_post AS STRING) AS DOUBLE) / n_post
+                  - CAST(CAST(s_pre AS STRING) AS DOUBLE) / n_pre)
                  / sqrt(
-                     ((CAST(CAST(ss_pre AS VARCHAR) AS DOUBLE)
-                       - CAST(CAST(s_pre AS VARCHAR) AS DOUBLE)
-                         * CAST(CAST(s_pre AS VARCHAR) AS DOUBLE) / n_pre)
+                     ((CAST(CAST(ss_pre AS STRING) AS DOUBLE)
+                       - CAST(CAST(s_pre AS STRING) AS DOUBLE)
+                         * CAST(CAST(s_pre AS STRING) AS DOUBLE) / n_pre)
                       / (n_pre - 1)) / n_pre
-                     + ((CAST(CAST(ss_post AS VARCHAR) AS DOUBLE)
-                         - CAST(CAST(s_post AS VARCHAR) AS DOUBLE)
-                           * CAST(CAST(s_post AS VARCHAR) AS DOUBLE)
+                     + ((CAST(CAST(ss_post AS STRING) AS DOUBLE)
+                         - CAST(CAST(s_post AS STRING) AS DOUBLE)
+                           * CAST(CAST(s_post AS STRING) AS DOUBLE)
                            / n_post)
                         / (n_post - 1)) / n_post)
                END AS welch_t
@@ -6024,54 +5185,7 @@ def ts_intervention_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooled) because an intervention that shifts the level usually
     shifts the variance too. t NULLs when either arm has < 2 days
     (class-5 guard, identical both engines)."""
-    daily = seg_daily(spark, sf_dir)
-    cents = daily.select(
-        "segment",
-        F.when(F.col("d") >= F.lit("1995-06-01").cast("date"), 1)
-        .otherwise(0)
-        .alias("post"),
-        (F.col("x").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-    )
-    vD = F.col("v").cast("decimal(38,0)")
-    s = cents.groupBy("segment").agg(
-        F.sum(1 - F.col("post")).cast("bigint").alias("n_pre"),
-        F.sum("post").cast("bigint").alias("n_post"),
-        F.sum((1 - F.col("post")) * F.col("v"))
-        .cast("decimal(38,0)")
-        .alias("s_pre"),
-        F.sum(F.col("post") * F.col("v"))
-        .cast("decimal(38,0)")
-        .alias("s_post"),
-        F.sum((1 - F.col("post")) * vD * F.col("v"))
-        .cast("decimal(38,0)")
-        .alias("ss_pre"),
-        F.sum(F.col("post") * vD * F.col("v"))
-        .cast("decimal(38,0)")
-        .alias("ss_post"),
-    )
-    pre_m = as_d(F.col("s_pre")) / F.col("n_pre")
-    post_m = as_d(F.col("s_post")) / F.col("n_post")
-    var_pre = (
-        as_d(F.col("ss_pre"))
-        - as_d(F.col("s_pre")) * as_d(F.col("s_pre")) / F.col("n_pre")
-    ) / (F.col("n_pre") - 1)
-    var_post = (
-        as_d(F.col("ss_post"))
-        - as_d(F.col("s_post")) * as_d(F.col("s_post")) / F.col("n_post")
-    ) / (F.col("n_post") - 1)
-    return s.select(
-        "segment",
-        "n_pre",
-        "n_post",
-        (pre_m / 100).alias("pre_mean"),
-        (post_m / 100).alias("post_mean"),
-        (post_m / pre_m - 1).alias("lift"),
-        F.when(
-            (F.col("n_pre") > 1) & (F.col("n_post") > 1),
-            (post_m - pre_m)
-            / F.sqrt(var_pre / F.col("n_pre") + var_post / F.col("n_post")),
-        ).alias("welch_t"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "ts_intervention_step")
 
 
 # ---------------------------------------------------------------------------
@@ -6213,31 +5327,31 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         base AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n1,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS s1,
-                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(m AS DECIMAL(19,0)) * m) AS STRING)
                         AS DOUBLE) AS s2
             FROM seq
         ),
         qs AS (
             SELECT 2 AS q, CAST(COUNT(*) AS BIGINT) AS nq,
-                   CAST(CAST(SUM(CAST(y2 AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(y2 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(CAST(y2 AS DECIMAL(19,0)) * y2) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(y2 AS DECIMAL(19,0)) * y2) AS STRING)
                         AS DOUBLE) AS sy2
             FROM seq WHERE t >= 2
             UNION ALL
             SELECT 4, CAST(COUNT(*) AS BIGINT),
-                   CAST(CAST(SUM(CAST(y4 AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(y4 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE),
-                   CAST(CAST(SUM(CAST(y4 AS DECIMAL(19,0)) * y4) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(y4 AS DECIMAL(19,0)) * y4) AS STRING)
                         AS DOUBLE)
             FROM seq WHERE t >= 4
             UNION ALL
             SELECT 8, CAST(COUNT(*) AS BIGINT),
-                   CAST(CAST(SUM(CAST(y8 AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(y8 AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE),
-                   CAST(CAST(SUM(CAST(y8 AS DECIMAL(19,0)) * y8) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(y8 AS DECIMAL(19,0)) * y8) AS STRING)
                         AS DOUBLE)
             FROM seq WHERE t >= 8
         )
@@ -6268,53 +5382,7 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression. Degenerate zero variance NULLs identically. Scale:
     corpus work is the shared daily agg; everything downstream rides
     the O(days) return relation."""
-    rm = mkt_returns(seg_daily(spark, sf_dir))
-    wt = Window.orderBy("d")  # calendar-bounded
-    seq = rm.select(
-        "m",
-        F.row_number().over(wt).alias("t"),
-        F.sum("m").over(wt.rowsBetween(-1, 0)).alias("y2"),
-        F.sum("m").over(wt.rowsBetween(-3, 0)).alias("y4"),
-        F.sum("m").over(wt.rowsBetween(-7, 0)).alias("y8"),
-    )
-    base = seq.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n1"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)"))).alias("s1"),
-        as_d(F.sum(F.col("m").cast("decimal(19,0)") * F.col("m"))).alias("s2"),
-    )
-    parts = []
-    for q, ycol in ((2, "y2"), (4, "y4"), (8, "y8")):
-        parts.append(
-            seq.filter(F.col("t") >= q).agg(
-                F.lit(q).alias("q"),
-                F.count(F.lit(1)).cast("bigint").alias("nq"),
-                as_d(F.sum(F.col(ycol).cast("decimal(19,0)"))).alias("sy"),
-                as_d(
-                    F.sum(F.col(ycol).cast("decimal(19,0)") * F.col(ycol))
-                ).alias("sy2"),
-            )
-        )
-    qs = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    n1_d = F.col("n1").cast("double")
-    nq_d = F.col("nq").cast("double")
-    q_d = F.col("q").cast("double")
-    var1_num = n1_d * F.col("s2") - F.col("s1") * F.col("s1")
-    return (
-        qs.crossJoin(F.broadcast(base))
-        .select(
-            F.col("q").cast("int").alias("q"),
-            F.col("nq").alias("n_periods"),
-            F.when(
-                (F.col("n1") > 1) & (F.col("nq") > 1) & (var1_num > 0),
-                (
-                    (nq_d * F.col("sy2") - F.col("sy") * F.col("sy"))
-                    * (n1_d * (n1_d - 1))
-                )
-                / ((q_d * (nq_d * (nq_d - 1))) * var1_num),
-            ).alias("vr"),
-        )
-        .orderBy("q")
-    )
+    return run_sql(spark, sf_dir, "ts_variance_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -6677,10 +5745,10 @@ def ts_theil_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         roll AS (
             SELECT event_type, rn,
-                   CAST(CAST(x AS VARCHAR) AS DOUBLE) AS xd,
+                   CAST(CAST(x AS STRING) AS DOUBLE) AS xd,
                    CAST(COUNT(*) OVER w AS BIGINT) AS wn,
-                   CAST(CAST(MIN(x) OVER w AS VARCHAR) AS DOUBLE) AS lo,
-                   CAST(CAST(MAX(x) OVER w AS VARCHAR) AS DOUBLE) AS hi
+                   CAST(CAST(MIN(x) OVER w AS STRING) AS DOUBLE) AS lo,
+                   CAST(CAST(MAX(x) OVER w AS STRING) AS DOUBLE) AS hi
             FROM daily
             WINDOW w AS (PARTITION BY event_type ORDER BY rn
                          ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
@@ -6724,69 +5792,7 @@ def ts_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation as floor-quantized q6 BIGINTs, so the per-series SUM
     is exact integer arithmetic. One map-side daily agg; windows over
     the 30-row series per type."""
-    daily = event_daily_rn(spark, sf_dir)
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("rn")
-        .rowsBetween(-13, Window.currentRow)
-    )
-    roll = daily.select(
-        "event_type",
-        "rn",
-        as_d(F.col("x")).alias("xd"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("wn"),
-        as_d(F.min("x").over(w)).alias("lo"),
-        as_d(F.max("x").over(w)).alias("hi"),
-    )
-    k = roll.filter(F.col("wn") == 14).select(
-        "event_type",
-        "rn",
-        F.when(
-            F.col("hi") > F.col("lo"),
-            (F.col("xd") - F.col("lo")) / (F.col("hi") - F.col("lo")),
-        ).alias("pk"),
-    )
-    wl = Window.partitionBy("event_type").orderBy("rn")
-    kd = k.select(
-        "event_type",
-        "rn",
-        "pk",
-        F.lag("pk", 1).over(wl).alias("k1"),
-        F.lag("pk", 2).over(wl).alias("k2"),
-    )
-    third = F.lit("3.0").cast("double")
-    return (
-        kd.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_days"),
-            F.sum(
-                F.when(F.col("pk") > F.lit("0.8").cast("double"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_overbought"),
-            F.sum(
-                F.when(F.col("pk") < F.lit("0.2").cast("double"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_oversold"),
-            lsum(F.col("pk")).alias("k_q6_sum"),
-            F.sum(
-                F.when(
-                    F.col("pk").isNotNull()
-                    & F.col("k1").isNotNull()
-                    & F.col("k2").isNotNull(),
-                    F.floor(
-                        ((F.col("pk") + F.col("k1")) + F.col("k2"))
-                        / third
-                        * 1e6
-                    ).cast("bigint"),
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("d_q6_sum"),
-        )
-        .orderBy("event_type")
-    )
+    return run_sql(spark, sf_dir, "ts_stochastic_oscillator")
 
 
 # ---------------------------------------------------------------------------

@@ -18,38 +18,12 @@ decimal-routed on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import dsum, o_dsum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.registry import register
-
-
-def _eur_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suppliers in region EUROPE with their nation name — an SF-scaling
-    supplier subset, so no broadcast hint: AQE broadcasts it while it
-    fits and degrades to a shuffled join beyond the limit."""
-    nations = (
-        load_table(spark, sf_dir, "nation")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "region").filter(
-                    F.col("r_name") == "EUROPE"
-                )
-            ),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("n_nationkey", "n_name")
-    )
-    return (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(nations),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
+from finance_etl_spark.plans.registry import register, run_sql
 
 
 @register(
@@ -92,27 +66,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned pass over the candidate set, never a self-join.
     Per-row division and MIN are IEEE-exact, so the min-cost equality
     selects identical rows (including ties) in both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    supply = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost")
-    )
-    parts = (
-        load_table(spark, sf_dir, "part")
-        .filter((F.col("p_type") == "LARGE") & F.col("p_size").between(10, 25))
-        .select("p_partkey", "p_name")
-    )
-    cand = supply.join(
-        parts, F.col("l_partkey") == F.col("p_partkey")
-    ).join(
-        _eur_suppliers(spark, sf_dir),
-        F.col("l_suppkey") == F.col("s_suppkey"),
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        cand.withColumn("mc", F.min("unit_cost").over(w))
-        .filter(F.col("unit_cost") == F.col("mc"))
-        .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name", "unit_cost")
-    )
+    return run_sql(spark, sf_dir, "q2_min_cost_supplier")
 
 
 @register(
@@ -137,20 +91,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date comparison as a join conjunct — the quarter filter prunes
     the orders scan before the shuffle, and the group-by carries 5
     priority groups."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
-        o.join(
-            li,
-            (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
+    return run_sql(spark, sf_dir, "q4_order_priority")
 
 
 @register(
@@ -173,16 +114,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to three columns, and the single global aggregate is one
     map-side partial per partition + a 1-row final — the minimal
     possible data movement for this query at any scale."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
+    return run_sql(spark, sf_dir, "q6_forecast_revenue")
 
 
 @register(
@@ -213,38 +145,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey, and the
     asymmetric-pair predicate is a residual on the tiny joined row —
     group-by carries 2 directions × ~7 years."""
-    two = ["NATION_1", "NATION_2"]
-    nation = load_table(spark, sf_dir, "nation").filter(F.col("n_name").isin(two))
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(nation.select("n_nationkey", F.col("n_name").alias("supp_nation"))),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "supp_nation")
-    )
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(nation.select("n_nationkey", F.col("n_name").alias("cust_nation"))),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("c_custkey", "cust_nation")
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    return (
-        li.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-        )
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-    )
+    return run_sql(spark, sf_dir, "q7_volume_shipping")
 
 
 @register(
@@ -284,61 +185,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     (part type, supplier nation, customer→region) are filtered before
     their joins and AQE-sized — broadcast while small, shuffle at
     scale; the only forced fact shuffle is lineitem⋈orders."""
-    america_nations = (
-        load_table(spark, sf_dir, "nation")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-            ),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("n_nationkey")
-    )
-    c = load_table(spark, sf_dir, "customer").join(
-        F.broadcast(america_nations),
-        F.col("c_nationkey") == F.col("n_nationkey"),
-        "left_semi",
-    ).select("c_custkey")
-    p = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_type") == "ECONOMY")
-        .select("p_partkey")
-    )
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").select(
-                    "n_nationkey", F.col("n_name").alias("supp_nation")
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "supp_nation")
-    )
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            (
-                dsum(
-                    F.when(F.col("supp_nation") == "NATION_3", volume).otherwise(
-                        F.lit(0)
-                    )
-                )
-                / dsum(volume)
-            ).alias("mkt_share")
-        )
-    )
+    return run_sql(spark, sf_dir, "q8_market_share")
 
 
 @register(
@@ -367,31 +214,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier→nation path is pre-filtered and AQE-sized (broadcast while
     small); lineitem⋈orders shuffles once on orderkey; the profit
     expression folds into decimal partials."""
-    p = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%red%"))
-        .select("p_partkey", "p_retailprice")
-    )
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(load_table(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", F.col("n_name").alias("nation"))
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = load_table(spark, sf_dir, "lineitem")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
-    return (
-        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("nation", F.year("o_orderdate").alias("o_year"))
-        .agg(dsum(profit).alias("sum_profit"))
-    )
+    return run_sql(spark, sf_dir, "q9_product_type_profit")
 
 
 @register(
@@ -460,16 +283,16 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM eur_li GROUP BY 1
         ),
         tot AS (
-            SELECT CAST(CAST(SUM(vdec) AS VARCHAR) AS DOUBLE) AS tv
+            SELECT CAST(CAST(SUM(vdec) AS STRING) AS DOUBLE) AS tv
             FROM pp
         ),
         npart AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS nparts FROM part
         )
         SELECT p_partkey,
-               CAST(CAST(vdec AS VARCHAR) AS DOUBLE) AS value
+               CAST(CAST(vdec AS STRING) AS DOUBLE) AS value
         FROM pp CROSS JOIN tot CROSS JOIN npart
-        WHERE CAST(CAST(vdec AS VARCHAR) AS DOUBLE)
+        WHERE CAST(CAST(vdec AS STRING) AS DOUBLE)
               > (tv * CAST('20.0' AS DOUBLE)) / nparts
     """,
 )
@@ -481,7 +304,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     param: TPC-H sizing fixes |part| = 200,000 x SF, so
     FRACTION * total = total * 0.0001 * 200000 / |part|
                      = total * 20 / |part| —
-    identical in the builder and the static oracle with no SF
+    one static text on both engines with no SF
     templating, and correct at any SF including ones never seen
     locally. On this synthetic TPC-H-ish corpus (revenue proxy for the
     missing partsupp cost*availqty; near-uniform per-part shares) the
@@ -498,38 +321,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 1-row broadcasts into the per-part filter; the EUROPE supplier
     semi join is AQE-sized (broadcast while small, shuffled at scale);
     one fact shuffle on partkey."""
-    eur_keys = _eur_suppliers(spark, sf_dir).select("s_suppkey")
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .join(eur_keys, F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
-        .select(
-            "l_partkey",
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("val"),
-        )
-    )
-    per_part = li.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
-        F.sum(F.col("val").cast("decimal(30,10)"))
-        .cast("decimal(38,10)")
-        .alias("vdec")
-    )
-    tot = per_part.agg(
-        F.sum("vdec").cast("string").cast("double").alias("tv"),
-    )
-    npart = (
-        load_table(spark, sf_dir, "part")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("nparts"))
-    )
-    value = F.col("vdec").cast("string").cast("double")
-    return (
-        per_part.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(npart))
-        .filter(
-            value
-            > (F.col("tv") * F.expr("CAST('20.0' AS DOUBLE)"))
-            / F.col("nparts").cast("double")
-        )
-        .select("p_partkey", value.alias("value"))
-    )
+    return run_sql(spark, sf_dir, "q11_important_stock")
 
 
 @register(
@@ -552,14 +344,14 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM eur_li GROUP BY 1
         ),
         tot AS (
-            SELECT CAST(CAST(SUM(vdec) AS VARCHAR) AS DOUBLE) AS tv,
+            SELECT CAST(CAST(SUM(vdec) AS STRING) AS DOUBLE) AS tv,
                    CAST(COUNT(*) AS BIGINT) AS np
             FROM pp
         )
         SELECT p_partkey,
-               CAST(CAST(vdec AS VARCHAR) AS DOUBLE) AS value
+               CAST(CAST(vdec AS STRING) AS DOUBLE) AS value
         FROM pp CROSS JOIN tot
-        WHERE CAST(CAST(vdec AS VARCHAR) AS DOUBLE)
+        WHERE CAST(CAST(vdec AS STRING) AS DOUBLE)
               > (CAST('1.5' AS DOUBLE) * tv) / np
     """,
 )
@@ -578,34 +370,7 @@ def agg_stock_mean_multiple(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. The scalar is a 1-row broadcast into the per-part
     filter (never a second scan per group); the EUROPE supplier semi
     join is AQE-sized; one fact shuffle on partkey."""
-    eur_keys = _eur_suppliers(spark, sf_dir).select("s_suppkey")
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .join(eur_keys, F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
-        .select(
-            "l_partkey",
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("val"),
-        )
-    )
-    per_part = li.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
-        F.sum(F.col("val").cast("decimal(30,10)"))
-        .cast("decimal(38,10)")
-        .alias("vdec")
-    )
-    tot = per_part.agg(
-        F.sum("vdec").cast("string").cast("double").alias("tv"),
-        F.count(F.lit(1)).cast("bigint").alias("np"),
-    )
-    value = F.col("vdec").cast("string").cast("double")
-    return (
-        per_part.crossJoin(F.broadcast(tot))
-        .filter(
-            value
-            > (F.expr("CAST('1.5' AS DOUBLE)") * F.col("tv"))
-            / F.col("np").cast("double")
-        )
-        .select("p_partkey", value.alias("value"))
-    )
+    return run_sql(spark, sf_dir, "agg_stock_mean_multiple")
 
 
 @register(
@@ -631,23 +396,7 @@ def q12_shipping_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-priority orders per bucket. Both conditional counts fold into
     one hash aggregate's partials; the date filter pushes into the
     lineitem scan; one orderkey shuffle."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(F.when(late, "late").otherwise("ontime").alias("ship_bucket"))
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
-        )
-    )
+    return run_sql(spark, sf_dir, "q12_shipping_lateness")
 
 
 @register(
@@ -672,17 +421,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     without dropping customers, which a WHERE clause would get wrong).
     Two chained aggregations: the first shuffles on custkey, the
     second on the tiny count domain."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "5-LOW"
-    ).select("o_custkey", "o_orderkey")
-    return (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-    )
+    return run_sql(spark, sf_dir, "q13_customer_distribution")
 
 
 @register(
@@ -709,27 +448,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact, because revenues are decimal-derived doubles and MAX is
     order-independent, so ties (all maximal suppliers) surface
     identically in both engines."""
-    rev = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-        )
-        .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "total_revenue"
-            )
-        )
-    )
-    mx = rev.agg(F.max("total_revenue").alias("mx"))
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.crossJoin(F.broadcast(mx))
-        .filter(F.col("total_revenue") == F.col("mx"))
-        .join(s, F.col("supplier_no") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
+    return run_sql(spark, sf_dir, "q15_top_supplier")
 
 
 @register(
@@ -760,27 +479,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     partkey partitioning: one shuffle, reused). The 0.2×avg cap is
     (decimal sum → double)/count then one multiply — IEEE-identical in
     both engines, so boundary rows classify the same way."""
-    pk = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#1")
-        .select("p_partkey")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .join(pk, F.col("l_partkey") == F.col("p_partkey"), "left_semi")
-        .select("l_partkey", "l_quantity", "l_extendedprice")
-    )
-    cap = li.groupBy("l_partkey").agg(
-        (F.lit(0.2) * (dsum("l_quantity") / F.count(F.lit(1)))).alias("qty_cap")
-    )
-    return (
-        li.join(cap, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("qty_cap"))
-        .agg(
-            (dsum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_small"),
-        )
-    )
+    return run_sql(spark, sf_dir, "q17_small_quantity_revenue")
 
 
 @register(
@@ -806,35 +505,7 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     unioned scans, not a nested loop. Common-factor extraction also
     lets the quantity bounds (1..30 overall) push to the lineitem
     scan."""
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    band = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(10, 30)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & F.col("p_size").between(20, 50)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-        .filter(band)
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
+    return run_sql(spark, sf_dir, "q19_disjunctive_predicates")
 
 
 @register(
@@ -863,28 +534,7 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5×availqty). The part-key semi join prunes the lineitem scan
     (AQE-sized); the (suppkey, partkey) agg shuffles once; the outer IN
     decorrelates to a semi join against the 100-row supplier table."""
-    pk = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%blue%"))
-        .select("p_partkey")
-    )
-    movers = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .join(pk, F.col("l_partkey") == F.col("p_partkey"), "left_semi")
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(dsum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > 50.0)
-        .select("l_suppkey")
-    )
-    return (
-        load_table(spark, sf_dir, "supplier")
-        .join(movers, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .select("s_suppkey", "s_name", "s_acctbal")
-    )
+    return run_sql(spark, sf_dir, "q20_part_promotion")
 
 
 _Q21_SQL = """
@@ -918,9 +568,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS on the same fact table decorrelate to a left-semi and a
     left-anti hash join on orderkey — three orderkey-partitioned joins
     that AQE stacks on one exchange, never a per-row re-scan."""
-    for t in ("supplier", "lineitem", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_Q21_SQL)
+    return run_sql(spark, sf_dir, "q21_waiting_suppliers")
 
 
 # {total} is each engine's exact-sum recipe: o_dsum for DuckDB, its

@@ -54,7 +54,12 @@ def configure(spark: SparkSession) -> SparkSession:
     Raises if a semantic conf (UTC session time zone, nanos-as-long
     parquet timestamps) cannot be set: queries would otherwise return
     shifted or unreadable timestamps instead of failing.
+
+    Also puts the package root on the Python workers' ``PYTHONPATH``:
+    UDFs and Python data sources unpickle references to this package in
+    the worker, which does not inherit the driver's ``sys.path``.
     """
+    _share_package_root(spark)
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -63,6 +68,24 @@ def configure(spark: SparkSession) -> SparkSession:
                 raise RuntimeError(f"cannot set semantic conf {k}={v}") from e
     _quiet_bounded_window_warning(spark)
     return spark
+
+
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _share_package_root(spark: SparkSession) -> None:
+    """Every Python function Spark ships (UDF, data source, foreachBatch)
+    carries ``SparkContext.environment`` as the worker's environment, and
+    the worker factory prepends its ``PYTHONPATH`` to the worker's. A
+    session with no local SparkContext (Spark Connect) has no workers
+    to reach."""
+    try:
+        env = spark.sparkContext.environment
+    except (AttributeError, NotImplementedError):
+        return
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
 
 
 def _quiet_bounded_window_warning(spark: SparkSession) -> None:

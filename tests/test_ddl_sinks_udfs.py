@@ -1,6 +1,9 @@
 """DDL (X1-X3), parquet sink (D1-D4), and the UDF/UDTF API surfaces."""
 
 import gc
+import os
+import subprocess
+import sys
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -11,6 +14,8 @@ from finance_etl_spark.io.ddl import build_schema, recreate_tables
 from finance_etl_spark.io.sinks import append_new_records, read_existing_keys
 from finance_etl_spark.operators.incremental import with_surrogate_key
 from finance_etl_spark.session import count_py4j_calls
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 FIELDS = {
     "surrogate_key": {"type": "String", "nullable": False},
@@ -139,6 +144,37 @@ def test_rowwise_udf_agrees_with_builtin(spark, sf_dir):
         F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias("jvm"),
     )
     assert cmp.filter(F.col("py") != F.col("jvm")).count() == 0
+
+
+def test_python_workers_import_the_package_from_any_directory(tmp_path, sf_dir):
+    """A driver started outside the checkout, on a session it built
+    itself, with the repo only on its own sys.path (as __spark_entry__.py
+    puts it there): the Python workers that run a pandas UDF and a Python
+    data source still import the package."""
+    script = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "1g").getOrCreate())
+from finance_etl_spark import plans
+for name in ("udf_grouped_median", "source_python_datasource"):
+    print(name, len(plans.get(name).build(spark, {sf_dir!r}).collect()))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = dict(line.split() for line in out.stdout.splitlines())
+    assert set(rows) == {"udf_grouped_median", "source_python_datasource"}
+    assert all(int(n) > 0 for n in rows.values())
 
 
 def test_udtf_split_words(spark):

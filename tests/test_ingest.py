@@ -170,6 +170,27 @@ def test_warm_batch_compiles_no_class(spark, tmp_path):
     assert compiles() - before == 0
 
 
+def test_csv_header_schema_py4j_calls_do_not_grow_with_files(spark, tmp_path):
+    """The statuses and the header names each come back in one round
+    trip, so a 12-file drop directory costs what a 2-file one does."""
+    src = os.path.join(FIX_DIR, "alpha_current_stm_20250101.csv")
+
+    def calls(n_files):
+        d = tmp_path / str(n_files)
+        d.mkdir()
+        for i in range(n_files):
+            shutil.copy(src, d / f"alpha_current_stm_{i:08d}.csv")
+        readings = []
+        for _ in range(3):  # py4j frees of unrelated proxies only ever add calls
+            gc.collect()
+            with count_py4j_calls() as n:
+                assert csv_header_schema(spark, str(d), _options()) is not None
+            readings.append(n[0] - n[1])
+        return min(readings)
+
+    assert calls(2) == calls(12)
+
+
 def test_run_ingest_py4j_budget(spark):
     """Each file group is one CSV read and a few SQL-text projections.
     Building the three fixture groups column by column with ``F.*`` and

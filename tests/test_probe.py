@@ -9,6 +9,7 @@ import os
 import pathlib
 import subprocess
 import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -82,6 +83,24 @@ def test_ab_different_rows_exits_nonzero(run, tmp_path):
     code, [rec] = run("ab", "q1_pricing_summary", f"{arm}:q3")
     assert code == 1
     assert not rec["rows_equal"]
+
+
+def test_ab_gate_ignores_loadavg_on_an_idle_host(monkeypatch):
+    """The gate reads the CPU share other processes used, not the
+    1-minute loadavg, which still carries the probe's own previous rep."""
+    monkeypatch.setattr(sys, "path", [str(TOOLS), *sys.path])
+    import probe
+
+    monkeypatch.setattr(probe.os, "getloadavg", lambda: (64.0, 64.0, 64.0))
+    monkeypatch.setattr(probe, "other_cpu_share", lambda: 0.0)
+    t0 = time.monotonic()
+    assert probe.wait_quiet() == 0.0
+    assert time.monotonic() - t0 < 0.5
+    # a busy host is waited out, one sample at a time
+    shares = iter([0.9, 0.6, 0.0])
+    monkeypatch.setattr(probe, "other_cpu_share", lambda: next(shares))
+    assert probe.wait_quiet() == 0.0
+    assert next(shares, None) is None
 
 
 def test_scale_derives_key_shifted_copies(run, spark, sf_dir, tmp_path):

@@ -41,7 +41,7 @@ from finance_etl_spark.session import PERF_CONFS, RUNTIME_CONFS, configure
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
-from check import canon  # noqa: E402
+from check import canon, rows_to_multiset  # noqa: E402
 from conftest import SF_DIR  # noqa: E402
 
 PKG = REPO / "finance_etl_spark"
@@ -161,33 +161,6 @@ COLUMN_CASES = [
             FROM daily)""",
     ),
     (
-        "phi2_cell",
-        lambda s, d: (
-            load_table(s, d, "orders")
-            .groupBy(
-                F.col("o_orderpriority").alias("r"), F.col("o_orderstatus").alias("c")
-            )
-            .agg(F.count(F.lit(1)).alias("o"))
-            .select(
-                "r",
-                "c",
-                "o",
-                F.sum("o").over(Window.partitionBy("r")).alias("nr"),
-                F.sum("o").over(Window.partitionBy("c")).alias("nc"),
-                F.sum("o").over(Window.partitionBy()).alias("n"),
-            )
-            .select("r", "c", R.phi2_cell())
-        ),
-        f"""WITH cells AS (
-            SELECT o_orderpriority AS r, o_orderstatus AS c, COUNT(*) AS o
-            FROM orders GROUP BY 1, 2),
-        m AS (
-            SELECT r, c, o, SUM(o) OVER (PARTITION BY r) AS nr,
-                   SUM(o) OVER (PARTITION BY c) AS nc, SUM(o) OVER () AS n
-            FROM cells)
-        SELECT r, c, {R.PHI2_CELL_SQL} FROM m""",
-    ),
-    (
         "pois_case",
         lambda s, d: load_table(s, d, "orders").select(
             "o_orderkey", R.pois_case(F.col("o_orderkey") * 7919 % 65536)
@@ -219,12 +192,6 @@ TABLE_CASES = [
         lambda s, d: R.mkt_returns(R.seg_daily(s, d)),
         f"WITH daily AS ({R.SEG_DAILY_SQL}), {R.MKT_RET_SQL} SELECT * FROM rm",
     ),
-    (
-        "market_model_sums",
-        lambda s, d: R.market_model_sums(R.seg_daily(s, d)),
-        f"WITH {R.MARKET_MODEL_SQL} SELECT * FROM s",
-    ),
-    ("seg_pnl_daily", lambda s, d: R.seg_pnl_daily(s, d), R.SEG_PNL_DAILY_SQL),
     ("event_daily", lambda s, d: R.event_daily(s, d), R.EVENT_DAILY_SQL),
     ("event_daily_rn", lambda s, d: R.event_daily_rn(s, d), R.EVENT_DAILY_RN_SQL),
     ("event_daily_xq", lambda s, d: R.event_daily_xq(s, d), R.EVENT_DAILY_XQ_SQL),
@@ -371,6 +338,84 @@ def test_get_spark_session_carries_runtime_confs(spark):
 
 def _plans_modules():
     return sorted((PKG / "plans").glob("*.py"))
+
+
+def _registered_builders():
+    """(module path, query name, its register() call, the builder def)
+    for every registered builder in plans/."""
+    for p in _plans_modules():
+        for node in ast.parse(p.read_text()).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            for deco in node.decorator_list:
+                if isinstance(deco, ast.Call) and getattr(deco.func, "id", "") == "register":
+                    yield p, deco.args[0].value, deco, node
+
+
+def _run_sql_queries():
+    """Queries whose builder is their oracle text run by plans.registry.run_sql."""
+    return sorted(
+        name
+        for _, name, _, fn in _registered_builders()
+        if any(
+            isinstance(x, ast.Call) and getattr(x.func, "id", "") == "run_sql"
+            for x in ast.walk(fn)
+        )
+    )
+
+
+def test_builders_run_their_oracle_text_only_through_run_sql():
+    """A builder that hands its own oracle text to ``spark.sql`` restates
+    run_sql (and registers its views by hand); it calls run_sql instead.
+    A run_sql call names the query whose builder makes it."""
+    bad = []
+    for p, name, deco, fn in _registered_builders():
+        oracle = next((k.value for k in deco.keywords if k.arg == "oracle"), None)
+        for x in ast.walk(fn):
+            if not isinstance(x, ast.Call):
+                continue
+            if (
+                isinstance(x.func, ast.Attribute)
+                and x.func.attr == "sql"
+                and x.args
+                and oracle is not None
+                and ast.dump(x.args[0]) == ast.dump(oracle)
+            ):
+                bad.append(f"{p.name}::{fn.name} runs its oracle through .sql")
+            if getattr(x.func, "id", "") == "run_sql" and x.args[2].value != name:
+                bad.append(f"{p.name}::{fn.name} runs {x.args[2].value}'s text")
+    assert not bad, bad
+
+
+def _queries_named_in_tests():
+    return {
+        node.value
+        for p in (REPO / "tests").glob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+    }
+
+
+@pytest.mark.parametrize(
+    "name", sorted(set(_run_sql_queries()) - _queries_named_in_tests())
+)
+def test_sql_text_query_matches_duckdb(spark, sf_dir, con, name):
+    """A query written once as SQL text that no other test names: Spark
+    and DuckDB parse the same text and return the same rows."""
+    from finance_etl_spark import plans
+
+    spec = plans.get(name)
+    df = spec.build(spark, sf_dir)
+    got = rows_to_multiset([c.lower() for c in df.columns], [tuple(r) for r in df.collect()])
+    tbl = con.execute(spec.oracle).fetch_arrow_table()
+    cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
+    want = rows_to_multiset(
+        [c.lower() for c in tbl.column_names], list(zip(*cols)) if tbl.num_rows else []
+    )
+    assert df.columns == tbl.column_names
+    # q7's FRANCE/GERMANY pair has no trade in the sf0.001 fixture
+    assert got or name == "q7_volume_shipping"
+    assert got == want
 
 
 def test_no_private_imports_across_plans_modules():

@@ -26,11 +26,13 @@ time   Warms each query once, then runs it N times (default 3): build (the
 
 ab     Warms both arms and keeps their rows, then runs N reps (default 6),
        alternating which arm goes first. Before each rep it waits, up to
-       GATE_TIMEOUT_S, for the 1-minute loadavg to fall below GATE_LOAD:
-       shared-host noise comes in multi-second bursts. Reports per-rep
-       times, the loads seen, medians and B's wins. Rows are compared as
-       multisets canonicalised by tools/check.py; the exit code is 1 when
-       they differ.
+       GATE_TIMEOUT_S, until the CPU share that processes outside this
+       probe used over the last GATE_WINDOW_S falls below GATE_LOAD:
+       shared-host noise comes in multi-second bursts. (The 1-minute
+       loadavg would not do: it lags the probe's own previous rep.)
+       Reports per-rep times, the shares seen, medians and B's wins. Rows
+       are compared as multisets canonicalised by tools/check.py; the exit
+       code is 1 when they differ.
 
 scale  Derives a corpus of K copies of --sf under --out (default .scratch/),
        once. Fact tables (lineitem, orders, events) are key-shifted into
@@ -76,6 +78,7 @@ from check import rows_to_multiset  # noqa: E402
 from finance_etl_spark import plans  # noqa: E402
 from finance_etl_spark.io.readers import TABLES, load_table  # noqa: E402
 from finance_etl_spark.session import count_py4j_calls, get_spark  # noqa: E402
+from host import HostStamp  # noqa: E402
 from spans import STAGE_FIELDS, Tracer  # noqa: E402
 
 RUNS = {"time": 3, "ab": 6, "scale": 2}
@@ -84,7 +87,9 @@ RUNS = {"time": 3, "ab": 6, "scale": 2}
 # probe would fail on a stage its last job skipped. Applies to a JVM this
 # process launches.
 RETAINED_STAGES = 100_000
-GATE_LOAD = 0.25 * len(os.sched_getaffinity(0))
+# ab's gate: the share of all CPUs that other processes may use
+GATE_LOAD = 0.25
+GATE_WINDOW_S = 0.5
 GATE_TIMEOUT_S = 240.0
 # scale: the columns each copy shifts, and the files a derived table is cut into
 SHIFTED = {
@@ -185,11 +190,20 @@ def time_query(spark, name: str, sf_dir: str, runs: int) -> dict:
     }
 
 
+def other_cpu_share() -> float:
+    """The share of all CPUs that processes outside this probe's tree
+    (its JVM and Python workers included) used over GATE_WINDOW_S."""
+    stamp = HostStamp(0)
+    time.sleep(GATE_WINDOW_S)
+    return stamp.finish()["other_cpu_share"]
+
+
 def wait_quiet() -> float:
     t0 = time.monotonic()
-    while os.getloadavg()[0] >= GATE_LOAD and time.monotonic() - t0 < GATE_TIMEOUT_S:
-        time.sleep(5)
-    return round(os.getloadavg()[0], 2)
+    share = other_cpu_share()
+    while share >= GATE_LOAD and time.monotonic() - t0 < GATE_TIMEOUT_S:
+        share = other_cpu_share()
+    return share
 
 
 def ab(spark, a: str, b: str, sf_dir: str, runs: int) -> dict:
@@ -201,9 +215,9 @@ def ab(spark, a: str, b: str, sf_dir: str, runs: int) -> dict:
         rows.append(rows_to_multiset(cols, [tuple(r) for r in df.collect()]))
         spark.catalog.clearCache()
     times: list[list[float]] = [[], []]
-    loads = []
+    shares = []
     for rep in range(runs):
-        loads.append(wait_quiet())
+        shares.append(wait_quiet())
         for i in (0, 1) if rep % 2 == 0 else (1, 0):
             name, build = arms[i]
             times[i].append(run_once(spark, name, build, sf_dir)["total_s"])
@@ -212,7 +226,7 @@ def ab(spark, a: str, b: str, sf_dir: str, runs: int) -> dict:
         "b": b,
         "sf_dir": sf_dir,
         "gate_load": GATE_LOAD,
-        "rep_loads": loads,
+        "rep_other_cpu_shares": shares,
         "a_s": times[0],
         "b_s": times[1],
         "a_median_s": round(statistics.median(times[0]), 3),
