@@ -29,7 +29,7 @@ def normalize_text_pandas(s: pd.Series) -> pd.Series:
     return s.str.lower().str.strip().str.replace(r"\s+", " ", regex=True)
 
 
-@udf(IntegerType())
+@udf(IntegerType(), useArrow=False)
 def token_count_rowwise(s: str) -> int:
     """Row-at-a-time scalar UDF (API demo only — the engine's real
     token counting is F.size(F.split(...)), JVM-side)."""

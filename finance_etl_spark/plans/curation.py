@@ -949,8 +949,8 @@ def dq_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("curation", "quality", "percentile"),
     oracle=f"""
         WITH b AS (
-            SELECT quantile_cont(o_totalprice, 0.01) AS p01,
-                   quantile_cont(o_totalprice, 0.99) AS p99
+            SELECT percentile_cont(0.01) WITHIN GROUP (ORDER BY o_totalprice) AS p01,
+                   percentile_cont(0.99) WITHIN GROUP (ORDER BY o_totalprice) AS p99
             FROM orders
         )
         SELECT o_orderstatus,
@@ -1106,28 +1106,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     |edges|, wedge count bounds the shuffle. The fact-table reduction
     to edges is the same two-broadcast-join + count shape PageRank
     uses."""
-    u = trade_pairs(spark, sf_dir)
-    thr = u.agg(F.percentile("w", 0.6).alias("t"))
-    ku = (
-        u.crossJoin(F.broadcast(thr))
-        .filter(F.col("w") >= F.col("t"))
-        .select("a", "b")
-    )
-    e1, e2, e3 = ku.alias("e1"), ku.alias("e2"), ku.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .select(F.col("e1.a").alias("x"), F.col("e1.b").alias("y"), F.col("e2.b").alias("z"))
-    )
-    n_edges = ku.agg(F.count(F.lit(1)).alias("n_edges"))
-    tri_agg = tri.agg(
-        F.count(F.lit(1)).alias("n_triangles"),
-        F.count_distinct("x").alias("n_apex_nodes"),
-    )
-    return F.broadcast(n_edges).crossJoin(tri_agg)
+    return run_sql(spark, sf_dir, "graph_triangle_count")
 
 
 def _survivor_oracle() -> str:
@@ -1496,9 +1475,8 @@ def cur_sample_tablesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT event_type,
                MAX(CAST(ts AS DATE)) AS latest_day,
-               CAST(date_diff('day', MAX(CAST(ts AS DATE)), DATE '2024-07-01')
-                    AS BIGINT) AS days_stale,
-               date_diff('day', MAX(CAST(ts AS DATE)), DATE '2024-07-01') <= 7
+               CAST(DATE '2024-07-01' - CAST(MAX(CAST(ts AS DATE)) AS DATE) AS BIGINT) AS days_stale,
+               CAST(DATE '2024-07-01' - CAST(MAX(CAST(ts AS DATE)) AS DATE) AS BIGINT) <= 7
                  AS within_sla
         FROM events
         GROUP BY event_type
@@ -1512,14 +1490,7 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayable — never wall-clock NOW() inside the query. One MAX
     aggregation per feed; at 100 TB with date-partitioned layout the
     scan prunes to the partition-metadata max, not a full read."""
-    e = load_table(spark, sf_dir, "events")
-    audit_date = F.lit("2024-07-01").cast("date")
-    stale = F.datediff(audit_date, F.max(F.col("ts").cast("date")))
-    return e.groupBy("event_type").agg(
-        F.max(F.col("ts").cast("date")).alias("latest_day"),
-        stale.cast("bigint").alias("days_stale"),
-        (stale <= 7).alias("within_sla"),
-    )
+    return run_sql(spark, sf_dir, "dq_freshness_sla")
 
 
 @register(
@@ -2384,73 +2355,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a left anti-join; counts stay BIGINT with one double
     division at the edge. The corpus-scale work is the 4-way fact
     join building edge weights — dims broadcast, one fact shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("s_nationkey").alias("src"),
-            F.col("c_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    u = (
-        e.filter(F.col("src") != F.col("dst"))
-        .groupBy(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .agg(F.sum("w").alias("w"))
-    )
-    # corpus-relative strength threshold: 60th percentile of edge
-    # weights, exact order statistic on the O(|V|^2)-bounded edge set
-    thr = u.select(
-        F.expr("percentile(w, 0.6)").alias("t")
-    )
-    ku = u.join(F.broadcast(thr)).filter(F.col("w") >= F.col("t")).select(
-        "a", "b"
-    )
-    nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
-        ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
-    deg = nbr.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
-    x = nbr.select(F.col("v").alias("pa"), "n")
-    y = nbr.select(F.col("v").alias("pb"), "n")
-    common = (
-        x.join(y, "n")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy(F.col("pa").alias("a"), F.col("pb").alias("b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    non_adj = common.join(ku, ["a", "b"], "left_anti")
-    return (
-        non_adj.join(
-            deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a")),
-            "a",
-        )
-        .join(
-            deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b")),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            "n_common",
-            "deg_a",
-            "deg_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("deg_a") + F.col("deg_b") - F.col("n_common")).cast(
-                    "double"
-                )
-            ).alias("jaccard"),
-        )
-        .orderBy("a", "b")
-    )
+    return run_sql(spark, sf_dir, "graph_jaccard_linkpred")
 
 
 @register(
@@ -3465,47 +3370,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one double division guarded NULL for deg<2 on both engines.
     Corpus work is the shared fact-to-edges reduction; the wedge join
     runs on the |V|-bounded neighbor relation."""
-    ku = trade_edges_undirected(spark, sf_dir)
-    nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
-        ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
-    deg = nbr.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    x = nbr.select("v", F.col("n").alias("n1"))
-    y = nbr.select(F.col("v").alias("v2"), F.col("n").alias("n2"))
-    wedge = x.join(y, (F.col("v") == F.col("v2")) & (F.col("n1") < F.col("n2"))).select(
-        "v", "n1", "n2"
-    )
-    k = ku.select(F.col("a").alias("ka"), F.col("b").alias("kb"))
-    closed = (
-        wedge.join(
-            k,
-            (F.col("ka") == F.col("n1")) & (F.col("kb") == F.col("n2")),
-            "left",
-        )
-        .groupBy("v")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_wedges"),
-            F.sum(F.when(F.col("ka").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_tri"),
-        )
-    )
-    dd = F.col("deg").cast("double")
-    return (
-        deg.join(closed, "v", "left")
-        .select(
-            F.col("v").alias("nationkey"),
-            "deg",
-            F.coalesce(F.col("n_wedges"), F.lit(0)).cast("bigint").alias("n_wedges"),
-            F.coalesce(F.col("n_tri"), F.lit(0)).cast("bigint").alias("n_tri"),
-            F.when(
-                F.col("deg") >= 2,
-                (2 * F.coalesce(F.col("n_tri"), F.lit(0))).cast("double")
-                / (dd * (dd - F.lit(1.0))),
-            ).alias("clustering_coeff"),
-        )
-        .orderBy("nationkey")
-    )
+    return run_sql(spark, sf_dir, "graph_clustering_coeff")
 
 
 @register(
@@ -3860,39 +3725,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one double division). The reverse-edge probe is a self equi-join
     on the |V|²-bounded distinct edge relation; corpus work is the
     shared fact-to-edges reduction."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .distinct()
-    )
-    n_edges = e.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-    b = e.select(F.col("src").alias("bsrc"), F.col("dst").alias("bdst"))
-    n_recip = (
-        e.join(
-            b,
-            (F.col("bsrc") == F.col("dst")) & (F.col("bdst") == F.col("src")),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_recip"))
-    )
-    return (
-        n_edges.crossJoin(F.broadcast(n_recip))
-        .select(
-            "n_edges",
-            "n_recip",
-            (
-                F.col("n_recip").cast("double") / F.col("n_edges").cast("double")
-            ).alias("reciprocity"),
-        )
-    )
+    return run_sql(spark, sf_dir, "graph_reciprocity")
 
 
 # ---------------------------------------------------------------------------
@@ -4555,38 +4388,7 @@ def graph_lpa_majority_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
     no floats anywhere. Scale: per round one shuffle on the node key
     of the neighbor relation; state between rounds is the |V|-row
     label relation."""
-    ku = trade_edges_undirected(spark, sf_dir)
-    nbr = ku.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
-        ku.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
-
-    def majority(labeled: DataFrame, lbl_col: str) -> DataFrame:
-        wrk = Window.partitionBy("v").orderBy(
-            F.col("cnt").desc(), F.col("lbl")
-        )
-        return (
-            labeled.groupBy("v", F.col(lbl_col).alias("lbl"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("rk", F.row_number().over(wrk))
-            .filter(F.col("rk") == 1)
-            .select("v", "lbl")
-        )
-
-    l1 = majority(nbr.withColumnRenamed("n", "lbl0"), "lbl0")
-    nbr_l1 = nbr.join(
-        l1.select(F.col("v").alias("n"), F.col("lbl").alias("nl")), "n"
-    )
-    l2 = majority(nbr_l1, "nl")
-    return (
-        l1.select("v", F.col("lbl").alias("label_r1"))
-        .join(l2.select("v", F.col("lbl").alias("label_r2")), "v")
-        .select(
-            F.col("v").cast("bigint").alias("nationkey"),
-            F.col("label_r1").cast("bigint"),
-            F.col("label_r2").cast("bigint"),
-        )
-        .orderBy("nationkey")
-    )
+    return run_sql(spark, sf_dir, "graph_lpa_majority_2round")
 
 
 # ---------------------------------------------------------------------------
@@ -4662,7 +4464,7 @@ _LICENSES = (
         ),
         hits AS (
             SELECT d.source, lic.license,
-                   CAST(SUM(CASE WHEN strpos(lower(d.text), lic.pat) > 0
+                   CAST(SUM(CASE WHEN instr(lower(d.text), lic.pat) > 0
                             THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
             FROM documents d CROSS JOIN lic
             GROUP BY d.source, lic.license
@@ -4687,37 +4489,7 @@ def cur_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible (grid join, not present-only — the fin_active_share
     lesson). Counts integer, rate one division; n_docs > 0 by the
     group-by. One scan x 5 literals, |sources| x 5 output."""
-    d = load_table(spark, sf_dir, "documents")
-    srcs = d.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    lic = d.sparkSession.createDataFrame(
-        list(_LICENSES), "license string, pat string"
-    )
-    hits = (
-        d.crossJoin(F.broadcast(lic))
-        .groupBy("source", "license")
-        .agg(
-            F.sum(
-                F.when(
-                    F.instr(F.lower(F.col("text")), F.col("pat")) > 0, 1
-                ).otherwise(0)
-            ).cast("bigint").alias("n_hits")
-        )
-    )
-    return (
-        srcs.join(hits, "source")
-        .select(
-            "source",
-            "license",
-            "n_docs",
-            "n_hits",
-            (
-                F.col("n_hits").cast("double") / F.col("n_docs").cast("double")
-            ).alias("hit_rate"),
-        )
-        .orderBy("source", "license")
-    )
+    return run_sql(spark, sf_dir, "cur_license_detect")
 
 
 # ---------------------------------------------------------------------------
@@ -4734,7 +4506,7 @@ _BLOCKTERMS = ("casino", "lottery", "jackpot", "winner takes")
         WITH flagged AS (
             SELECT source,
                    CASE WHEN {" OR ".join(
-                       f"strpos(lower(text), '{t}') > 0" for t in _BLOCKTERMS
+                       f"instr(lower(text), '{t}') > 0" for t in _BLOCKTERMS
                    )} THEN 1 ELSE 0 END AS hit
             FROM documents
         )
@@ -4757,26 +4529,7 @@ def cur_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast lookup at production size). Zero-hit sources still
     report their full row (counts integer, rate one division). One
     scan, one |sources|-row agg."""
-    d = load_table(spark, sf_dir, "documents")
-    hit = F.lit(False)
-    for t in _BLOCKTERMS:
-        hit = hit | (F.instr(F.lower(F.col("text")), F.lit(t)) > 0)
-    flagged = d.select(
-        "source", F.when(hit, 1).otherwise(0).alias("hit")
-    )
-    return (
-        flagged.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("hit").cast("bigint").alias("n_flagged"),
-            (F.count(F.lit(1)) - F.sum("hit")).cast("bigint").alias("n_passed"),
-            (
-                F.sum("hit").cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("flag_rate"),
-        )
-        .orderBy("source")
-    )
+    return run_sql(spark, sf_dir, "cur_blocklist_filter")
 
 
 # ---------------------------------------------------------------------------
@@ -5041,18 +4794,4 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT count. Same corpus-relative 60th-percentile edge set as
     the other round-9+ graph queries; corpus work is the one
     edge-build scan, graph state is nation-bounded."""
-    g = trade_edges_undirected(spark, sf_dir)
-    nbr = g.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-        g.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
-    x = nbr.select("v", F.col("n").alias("a"))
-    y = nbr.select("v", F.col("n").alias("b"))
-    cand = (
-        x.join(y, "v")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cn"))
-    )
-    return cand.join(g, ["a", "b"], "left_anti").select(
-        "a", "b", F.col("cn").alias("common_neighbors")
-    )
+    return run_sql(spark, sf_dir, "graph_common_neighbors")

@@ -37,7 +37,6 @@ from finance_etl_spark.plans.recipes import (
     SEG_DAILY_SQL,
     SEG_PNL_DAILY_SQL,
     SEG_RET_SQL,
-    dd_q6,
     mkt_returns,
     ncdf_sql,
     o_dd_q6,
@@ -586,8 +585,7 @@ def fin_fee_tiering(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH open_ar AS (
             SELECT o_orderkey, o_totalprice,
-                   date_diff('day', CAST(o_orderdate AS DATE),
-                             DATE '1998-08-01') AS age_days
+                   CAST(DATE '1998-08-01' - CAST(o_orderdate AS DATE) AS BIGINT) AS age_days
             FROM orders
             WHERE o_orderstatus <> 'F'
               AND o_orderdate < TIMESTAMP '1998-08-01'
@@ -610,27 +608,7 @@ def fin_ar_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer day difference; one shuffle for the 4-row aggregate.
     The reporting date is a parameter (fixed here so the oracle
     hash-matches); production binds current_date."""
-    import datetime as dt
-
-    asof = dt.date(1998, 8, 1)
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderstatus") != "F")
-        & (F.col("o_orderdate") < F.lit(dt.datetime(1998, 8, 1)))
-    )
-    age = F.datediff(F.lit(asof), F.col("o_orderdate").cast("date"))
-    bucket = (
-        F.when(age <= 30, "0-30")
-        .when(age <= 60, "31-60")
-        .when(age <= 90, "61-90")
-        .otherwise("90+")
-    )
-    return o.select(bucket.alias("bucket"), "o_totalprice", age.alias("age")).groupBy(
-        "bucket"
-    ).agg(
-        F.count(F.lit(1)).alias("n_invoices"),
-        dsum("o_totalprice").alias("open_amount"),
-        F.max("age").cast("long").alias("oldest_days"),
-    )
+    return run_sql(spark, sf_dir, "fin_ar_aging")
 
 
 @register(
@@ -684,58 +662,7 @@ def fin_wash_sale_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     follow the dsum decimal contract; each sell counts once however
     many repurchases it matches (per-sell GROUP BY before the account
     rollup)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    trades = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("l_partkey").alias("partkey"),
-        F.col("l_shipdate").cast("date").alias("d"),
-        "l_orderkey",
-        "l_linenumber",
-        "l_returnflag",
-        "l_discount",
-        "l_extendedprice",
-    )
-    sells = trades.filter(
-        (F.col("l_returnflag") == "R") & (F.col("l_discount") > 0.05)
-    )
-    buys = trades.filter(F.col("l_returnflag") != "R").select(
-        F.col("custkey").alias("b_custkey"),
-        F.col("partkey").alias("b_partkey"),
-        F.col("d").alias("b_d"),
-    )
-    washed = (
-        sells.join(
-            buys,
-            on=[
-                F.col("b_custkey") == F.col("custkey"),
-                F.col("b_partkey") == F.col("partkey"),
-                F.col("b_d") > F.col("d"),
-                F.col("b_d") <= F.date_add(F.col("d"), 30),
-            ],
-        )
-        .groupBy(
-            "custkey",
-            "l_orderkey",
-            "l_linenumber",
-            (F.col("l_extendedprice") * F.col("l_discount")).alias("loss_amt"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_repurchases"),
-            F.min("b_d").alias("first_repurchase"),
-        )
-    )
-    return (
-        washed.groupBy("custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_wash_sales"),
-            F.sum("n_repurchases").alias("n_repurchases"),
-            dsum("loss_amt").alias("disallowed_loss"),
-            F.min("first_repurchase").alias("earliest_repurchase"),
-        )
-        .orderBy(F.col("n_wash_sales").desc(), "custkey")
-        .limit(25)
-    )
+    return run_sql(spark, sf_dir, "fin_wash_sale_detect")
 
 
 def irr_bisect(days, amounts, lo: float = -0.95, hi: float = 10.0,
@@ -1353,7 +1280,7 @@ _BS_PUT = f"({_BS_CALL} - spot + strike * exp(-CAST(0.02 AS DOUBLE)))"
             JOIN nation n ON n.n_nationkey = c.c_nationkey
             GROUP BY n.n_nationkey
         ),
-        ks AS (SELECT unnest([80, 90, 100, 110, 120]) AS k_pct),
+        ks AS (SELECT k_pct FROM (VALUES (80), (90), (100), (110), (120)) AS t(k_pct)),
         grid AS (
             SELECT n_nationkey, k_pct, spot, sigma,
                    spot * CAST(k_pct AS DOUBLE) / CAST(100 AS DOUBLE)
@@ -1382,55 +1309,7 @@ def fin_black_scholes_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity applied to the SAME call expression, which the pytest
     checks against the exact parity identity and an erf-based
     reference price."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    spot = (
-        o.join(
-            c.select("c_custkey", "c_nationkey"),
-            o["o_custkey"] == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(n.select("n_nationkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("n_nationkey")
-        .agg(
-            (
-                F.sum(F.col("o_totalprice").cast("decimal(30,10)")).cast(
-                    "double"
-                )
-                / F.count(F.lit(1)).cast("double")
-            ).alias("spot"),
-            (
-                (10 + (F.min("n_nationkey") % 5) * 5).cast("double")
-                / F.lit(100).cast("double")
-            ).alias("sigma"),
-        )
-    )
-    ks = spark.createDataFrame(
-        [(80,), (90,), (100,), (110,), (120,)], "k_pct int"
-    )
-    grid = spot.crossJoin(F.broadcast(ks)).select(
-        "n_nationkey",
-        "k_pct",
-        "spot",
-        (
-            F.col("spot")
-            * F.col("k_pct").cast("double")
-            / F.lit(100).cast("double")
-        ).alias("strike"),
-        "sigma",
-    )
-    return grid.select(
-        "n_nationkey",
-        "k_pct",
-        "spot",
-        "strike",
-        "sigma",
-        F.expr(f"CAST(FLOOR({_BS_CALL} * 1e6) AS BIGINT)").alias("call_q6"),
-        F.expr(f"CAST(FLOOR({_BS_PUT} * 1e6) AS BIGINT)").alias("put_q6"),
-    ).orderBy("n_nationkey", "k_pct")
+    return run_sql(spark, sf_dir, "fin_black_scholes_grid")
 
 
 # ---------------------------------------------------------------------------
@@ -1518,10 +1397,8 @@ def fin_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid AS (
             SELECT n_nationkey, yld, c.cpn, m.mat
             FROM y
-            CROSS JOIN (SELECT unnest([CAST(0.02 AS DOUBLE),
-                                       CAST(0.04 AS DOUBLE),
-                                       CAST(0.06 AS DOUBLE)]) AS cpn) c
-            CROSS JOIN (SELECT unnest([2, 5, 10, 30]) AS mat) m
+            CROSS JOIN (SELECT cpn FROM (VALUES (CAST(0.02 AS DOUBLE)), (CAST(0.04 AS DOUBLE)), (CAST(0.06 AS DOUBLE))) AS t(cpn)) c
+            CROSS JOIN (SELECT mat FROM (VALUES (2), (5), (10), (30)) AS t(mat)) m
         )
         SELECT n_nationkey, cpn, mat, yld,
                CAST(FLOOR((cpn / yld
@@ -1548,29 +1425,7 @@ def fin_bond_duration_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out — model-sized at any SF. Both outputs floor-quantize at
     q8 so the driver hash sees integers; the pytest reference re-
     derives both from the explicit cashflow sum."""
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey")
-    y = n.withColumn(
-        "yld",
-        F.lit(0.01) + (F.col("n_nationkey") % 10).cast("double") * F.lit(0.005),
-    )
-    cpn = spark.createDataFrame([(0.02,), (0.04,), (0.06,)], "cpn double")
-    mat = spark.createDataFrame([(2,), (5,), (10,), (30,)], "mat int")
-    grid = y.crossJoin(F.broadcast(cpn)).crossJoin(F.broadcast(mat))
-    one = F.lit(1.0)
-    yld, c_, t_ = F.col("yld"), F.col("cpn"), F.col("mat").cast("double")
-    disc = F.pow(one + yld, -F.col("mat").cast("double"))
-    price = c_ / yld * (one - disc) + disc
-    mac = (one + yld) / yld - (one + yld + t_ * (c_ - yld)) / (
-        c_ * (F.pow(one + yld, t_) - one) + yld
-    )
-    return grid.select(
-        "n_nationkey",
-        "cpn",
-        "mat",
-        "yld",
-        F.floor(price * F.lit(1e8)).cast("bigint").alias("price_q8"),
-        F.floor(mac * F.lit(1e8)).cast("bigint").alias("macaulay_q8"),
-    ).orderBy("n_nationkey", "cpn", "mat")
+    return run_sql(spark, sf_dir, "fin_bond_duration_grid")
 
 
 @register(
@@ -2240,7 +2095,7 @@ def fin_capm_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH accr AS (
             SELECT o_orderpriority AS priority,
                    CAST(FLOOR(CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2))
-                                   AS VARCHAR) AS DOUBLE)
+                                   AS STRING) AS DOUBLE)
                         * CAST(0.05 AS DOUBLE)
                         * CAST(360 * (2002 - EXTRACT(year FROM o_orderdate))
                                + 30 * (1 - EXTRACT(month FROM o_orderdate))
@@ -2248,16 +2103,14 @@ def fin_capm_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
                                AS DOUBLE)
                         / CAST(360 AS DOUBLE) * 100) AS BIGINT) AS a30360,
                    CAST(FLOOR(CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2))
-                                   AS VARCHAR) AS DOUBLE)
+                                   AS STRING) AS DOUBLE)
                         * CAST(0.05 AS DOUBLE)
-                        * CAST(date_diff('day', CAST(o_orderdate AS DATE),
-                                         DATE '2002-01-01') AS DOUBLE)
+                        * CAST(CAST(DATE '2002-01-01' - CAST(o_orderdate AS DATE) AS BIGINT) AS DOUBLE)
                         / CAST(360 AS DOUBLE) * 100) AS BIGINT) AS aact360,
                    CAST(FLOOR(CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2))
-                                   AS VARCHAR) AS DOUBLE)
+                                   AS STRING) AS DOUBLE)
                         * CAST(0.05 AS DOUBLE)
-                        * CAST(date_diff('day', CAST(o_orderdate AS DATE),
-                                         DATE '2002-01-01') AS DOUBLE)
+                        * CAST(CAST(DATE '2002-01-01' - CAST(o_orderdate AS DATE) AS BIGINT) AS DOUBLE)
                         / CAST(365 AS DOUBLE) * 100) AS BIGINT) AS aact365
             FROM orders
         )
@@ -2282,41 +2135,7 @@ def fin_daycount_conventions(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap are exact integer sums (class-1: no raw double reduction).
     One scan, one hash agg, no joins; no division by data (class-5:
     denominators are literal constants)."""
-    o = load_table(spark, sf_dir, "orders")
-    p_d = as_d(F.col("o_totalprice").cast("decimal(12,2)"))
-    d30 = (
-        F.lit(360) * (F.lit(2002) - F.year("o_orderdate"))
-        + F.lit(30) * (F.lit(1) - F.month("o_orderdate"))
-        + (F.lit(1) - F.least(F.dayofmonth("o_orderdate"), F.lit(30)))
-    ).cast("double")
-    dact = F.datediff(
-        F.lit("2002-01-01").cast("date"), F.col("o_orderdate").cast("date")
-    ).cast("double")
-    accr = o.select(
-        F.col("o_orderpriority").alias("priority"),
-        F.floor(p_d * F.lit(0.05) * d30 / F.lit(360.0) * 100)
-        .cast("bigint")
-        .alias("a30360"),
-        F.floor(p_d * F.lit(0.05) * dact / F.lit(360.0) * 100)
-        .cast("bigint")
-        .alias("aact360"),
-        F.floor(p_d * F.lit(0.05) * dact / F.lit(365.0) * 100)
-        .cast("bigint")
-        .alias("aact365"),
-    )
-    return (
-        accr.groupBy("priority")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            (F.sum("a30360").cast("double") / 100).alias("accrued_30_360"),
-            (F.sum("aact360").cast("double") / 100).alias("accrued_act_360"),
-            (F.sum("aact365").cast("double") / 100).alias("accrued_act_365"),
-            (
-                (F.sum("a30360") - F.sum("aact360")).cast("double") / 100
-            ).alias("basis_30_360_vs_act_360"),
-        )
-        .orderBy("priority")
-    )
+    return run_sql(spark, sf_dir, "fin_daycount_conventions")
 
 
 @register(
@@ -2978,10 +2797,10 @@ def fin_twr_linked_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         tails AS (
             SELECT segment,
                    CAST(MIN(n) AS BIGINT) AS n,
-                   CAST((MIN(n) + 19) // 20 AS BIGINT) AS q,
-                   CAST(SUM(CASE WHEN rk_hi <= (n + 19) // 20
+                   CAST(FLOOR((MIN(n) + 19) / 20) AS BIGINT) AS q,
+                   CAST(SUM(CASE WHEN rk_hi <= CAST(FLOOR((n + 19) / 20) AS BIGINT)
                                  THEN r ELSE 0 END) AS BIGINT) AS top_sum,
-                   CAST(SUM(CASE WHEN rk_lo <= (n + 19) // 20
+                   CAST(SUM(CASE WHEN rk_lo <= CAST(FLOOR((n + 19) / 20) AS BIGINT)
                                  THEN r ELSE 0 END) AS BIGINT) AS bot_sum
             FROM ranked GROUP BY segment
         )
@@ -3008,44 +2827,7 @@ def fin_rachev_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no losses — degenerate, documented); tail means are presented in
     return units. Same deterministic (r, d) tiebreak as
     fin_var_exception_backtest."""
-    daily = seg_daily(spark, sf_dir)
-    ret = seg_returns(daily)
-    w_hi = Window.partitionBy("segment").orderBy(F.col("r").desc(), "d")
-    w_lo = Window.partitionBy("segment").orderBy("r", "d")
-    w_n = Window.partitionBy("segment")
-    ranked = ret.select(
-        "segment",
-        "r",
-        F.row_number().over(w_hi).alias("rk_hi"),
-        F.row_number().over(w_lo).alias("rk_lo"),
-        F.count(F.lit(1)).over(w_n).alias("n"),
-    )
-    qexpr = F.expr("CAST((n + 19) DIV 20 AS BIGINT)")
-    tails = ranked.groupBy("segment").agg(
-        F.min("n").cast("bigint").alias("n"),
-        F.min(F.expr("CAST((n + 19) DIV 20 AS BIGINT)")).alias("q"),
-        F.sum(F.when(F.col("rk_hi") <= qexpr, F.col("r")).otherwise(0))
-        .cast("bigint")
-        .alias("top_sum"),
-        F.sum(F.when(F.col("rk_lo") <= qexpr, F.col("r")).otherwise(0))
-        .cast("bigint")
-        .alias("bot_sum"),
-    )
-    return tails.select(
-        "segment",
-        "n",
-        "q",
-        (F.col("top_sum").cast("double") / F.col("q") / F.lit(1e9)).alias(
-            "etg"
-        ),
-        ((-F.col("bot_sum")).cast("double") / F.col("q") / F.lit(1e9)).alias(
-            "etl"
-        ),
-        F.when(
-            F.col("bot_sum") < 0,
-            F.col("top_sum").cast("double") / (-F.col("bot_sum")).cast("double"),
-        ).alias("rachev"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_rachev_ratio")
 
 
 @register(
@@ -4115,7 +3897,7 @@ def _kupiec_sql() -> str:
         ),
         var_t AS (
             SELECT segment,
-                   MIN(CASE WHEN rk = CAST((n1 + 19) // 20 AS BIGINT)
+                   MIN(CASE WHEN rk = CAST(FLOOR((n1 + 19) / 20) AS BIGINT)
                             THEN r END) AS var_q9
             FROM ranked GROUP BY segment
         ),
@@ -4139,7 +3921,7 @@ def _kupiec_sql() -> str:
                        - (CASE WHEN exceptions > 0
                                THEN exceptions * {l_fr}
                                ELSE CAST(0 AS DECIMAL(12,6)) END)
-                   AS VARCHAR) AS DOUBLE) AS lr_pof
+                   AS STRING) AS DOUBLE) AS lr_pof
             FROM s WHERE n_test > 0
         )
         SELECT segment, n_test, exceptions, lr_pof,
@@ -4170,74 +3952,7 @@ def fin_kupiec_pof(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms by the standard 0 ln 0 = 0 convention, identically guarded
     on both engines. Rejection at the chi-square(1) 95% critical
     value (string-routed). Per-segment windows ride O(days) rows."""
-
-    daily = seg_daily(spark, sf_dir)
-    ret = seg_returns(daily)
-    cut = F.lit("1998-01-01").cast("date")
-    est = ret.filter(F.col("d") < cut)
-    wr = Window.partitionBy("segment").orderBy("r", "d")
-    wn = Window.partitionBy("segment")
-    ranked = est.select(
-        "segment",
-        "r",
-        F.row_number().over(wr).alias("rk"),
-        F.count(F.lit(1)).over(wn).alias("n1"),
-    )
-    var_t = ranked.groupBy("segment").agg(
-        F.min(
-            F.when(
-                F.col("rk") == F.expr("CAST((n1 + 19) DIV 20 AS BIGINT)"),
-                F.col("r"),
-            )
-        ).alias("var_q9")
-    )
-    s = (
-        ret.filter(F.col("d") >= cut)
-        .join(F.broadcast(var_t), "segment")
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_test"),
-            F.sum(F.when(F.col("r") < F.col("var_q9"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("exceptions"),
-        )
-        .filter(F.col("n_test") > 0)
-    )
-    lnq = lambda c: F.log(c).cast("decimal(12,6)")  # noqa: E731
-    l_1p = lnq(F.lit("0.95").cast("double"))
-    l_p = lnq(F.lit("0.05").cast("double"))
-    n_d = F.col("n_test").cast("double")
-    x_d = F.col("exceptions").cast("double")
-    l_fr = lnq(x_d / n_d)
-    l_1fr = lnq((F.col("n_test") - F.col("exceptions")).cast("double") / n_d)
-    zero_dec = F.lit(0).cast("decimal(12,6)")
-    inner = (
-        (F.col("n_test") - F.col("exceptions")) * l_1p
-        + F.col("exceptions") * l_p
-        - F.when(F.col("exceptions") < F.col("n_test"),
-                 (F.col("n_test") - F.col("exceptions")) * l_1fr
-                 ).otherwise(zero_dec)
-        - F.when(F.col("exceptions") > 0,
-                 F.col("exceptions") * l_fr).otherwise(zero_dec)
-    )
-    out = s.select(
-        "segment",
-        "n_test",
-        "exceptions",
-        (
-            F.lit("-2.0").cast("double")
-            * inner.cast("string").cast("double")
-        ).alias("lr_pof"),
-    )
-    return out.select(
-        "segment",
-        "n_test",
-        "exceptions",
-        "lr_pof",
-        (F.col("lr_pof") > F.lit("3.841459").cast("double")).alias(
-            "reject_95"
-        ),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_kupiec_pof")
 
 
 # ---------------------------------------------------------------------------
@@ -4267,9 +3982,9 @@ def fin_kupiec_pof(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks AS (
             SELECT segment,
                    CAST(MIN(n) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN rk_lo = (n + 19) // 20
+                   CAST(SUM(CASE WHEN rk_lo = CAST(FLOOR((n + 19) / 20) AS BIGINT)
                                  THEN r ELSE 0 END) AS BIGINT) AS p5,
-                   CAST(SUM(CASE WHEN rk_lo = (19 * (n + 1)) // 20
+                   CAST(SUM(CASE WHEN rk_lo = CAST(FLOOR((19 * (n + 1)) / 20) AS BIGINT)
                                  THEN r ELSE 0 END) AS BIGINT) AS p95
             FROM ranked GROUP BY segment
         )
@@ -4289,51 +4004,12 @@ def fin_tail_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-statistic sibling of fin_rachev_ratio (which averages the
     tails instead of picking them). Same exactness recipe: returns
     floor-quantize to 1e-9 integers; the two picks are PINNED order
-    statistics at ceil(n/20) and ceil(19n/20) via integer DIV rank
+    statistics at ceil(n/20) and ceil(19n/20) via integer FLOOR rank
     formulas (never a double rank, never an engine percentile); the
     ratio NULLs when the 5th percentile is non-negative (no left
     tail — degenerate, documented). One rank window over
     calendar-bounded daily rows per segment."""
-    daily = seg_daily(spark, sf_dir)
-    ret = seg_returns(daily)
-    w_lo = Window.partitionBy("segment").orderBy("r", "d")
-    w_n = Window.partitionBy("segment")
-    ranked = ret.select(
-        "segment",
-        "r",
-        F.row_number().over(w_lo).alias("rk_lo"),
-        F.count(F.lit(1)).over(w_n).alias("n"),
-    )
-    picks = ranked.groupBy("segment").agg(
-        F.min("n").cast("bigint").alias("n"),
-        F.sum(
-            F.when(
-                F.col("rk_lo") == F.expr("CAST((n + 19) DIV 20 AS BIGINT)"),
-                F.col("r"),
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("p5"),
-        F.sum(
-            F.when(
-                F.col("rk_lo")
-                == F.expr("CAST((19 * (n + 1)) DIV 20 AS BIGINT)"),
-                F.col("r"),
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("p95"),
-    )
-    return picks.select(
-        "segment",
-        "n",
-        (F.col("p5").cast("double") / F.lit(1e9)).alias("p5_ret"),
-        (F.col("p95").cast("double") / F.lit(1e9)).alias("p95_ret"),
-        F.when(
-            F.col("p5") < 0,
-            F.col("p95").cast("double") / (-F.col("p5")).cast("double"),
-        ).alias("tail_ratio"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_tail_ratio")
 
 
 # ---------------------------------------------------------------------------
@@ -4354,9 +4030,9 @@ def fin_tail_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ends AS (
             SELECT segment,
-                   CAST(arg_min(cents, d) AS BIGINT) AS start_cents,
-                   CAST(arg_max(cents, d) AS BIGINT) AS end_cents,
-                   CAST(date_diff('day', MIN(d), MAX(d)) AS BIGINT) AS days
+                   CAST(min_by(cents, d) AS BIGINT) AS start_cents,
+                   CAST(max_by(cents, d) AS BIGINT) AS end_cents,
+                   CAST(CAST(MAX(d) AS DATE) - CAST(MIN(d) AS DATE) AS BIGINT) AS days
             FROM daily GROUP BY segment
         )
         SELECT segment, start_cents, end_cents, days,
@@ -4364,7 +4040,7 @@ def fin_tail_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(CAST(
                    CAST(ln(CAST(end_cents AS DOUBLE)) AS DECIMAL(12,6))
                    - CAST(ln(CAST(start_cents AS DOUBLE)) AS DECIMAL(12,6))
-                 AS VARCHAR) AS DOUBLE)
+                 AS STRING) AS DOUBLE)
                  * CAST('365.25' AS DOUBLE) / CAST(days AS DOUBLE)
                END AS log_cagr
         FROM ends ORDER BY segment
@@ -4377,47 +4053,13 @@ def fin_cagr_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     need (exp is libm-divergent cross-engine; ln quantizes exactly,
     so the LOG rate is the twin-able canonical form, and exp of it is
     a trivial presentation step for a consumer). Endpoints are
-    arg_min/arg_max picks on the unique per-segment date (min_by/
-    max_by — deterministic, no window needed); both lns quantize to
+    min_by/max_by picks on the unique per-segment date (deterministic,
+    no window needed); both lns quantize to
     DECIMAL(12,6) on exact integer cents and subtract EXACTLY in
     decimal; the one double expression is the annualization. Guarded
     on the degenerate single-day segment. One keyed agg over
     calendar-bounded dailies."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    daily = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderdate").cast("date").alias("d"),
-        )
-        .agg(
-            (
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("decimal(18,2)")
-                * 100
-            )
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    ends = daily.groupBy("segment").agg(
-        F.min_by("cents", "d").cast("bigint").alias("start_cents"),
-        F.max_by("cents", "d").cast("bigint").alias("end_cents"),
-        F.datediff(F.max("d"), F.min("d")).cast("bigint").alias("days"),
-    )
-    lnq = lambda col: F.log(F.col(col).cast("double")).cast("decimal(12,6)")  # noqa: E731
-    log_cagr = F.when(
-        F.col("days") > 0,
-        as_d(lnq("end_cents") - lnq("start_cents"))
-        * F.expr("CAST('365.25' AS DOUBLE)")
-        / F.col("days").cast("double"),
-    )
-    return ends.select(
-        "segment", "start_cents", "end_cents", "days", log_cagr.alias("log_cagr")
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_cagr_log")
 
 
 # ---------------------------------------------------------------------------
@@ -4513,10 +4155,10 @@ def fin_jensen_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         per AS (
             SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_days,
                    sqrt(CAST(CAST(SUM(CAST(ddq AS DECIMAL(19,0)) * ddq)
-                              AS VARCHAR) AS DOUBLE)
+                              AS STRING) AS DOUBLE)
                         / CAST(COUNT(*) AS DOUBLE)) / 1e6 AS ulcer,
-                   (CAST(CAST(arg_max(x, d) AS VARCHAR) AS DOUBLE)
-                      / CAST(CAST(arg_min(x, d) AS VARCHAR) AS DOUBLE)
+                   (CAST(CAST(max_by(x, d) AS STRING) AS DOUBLE)
+                      / CAST(CAST(min_by(x, d) AS STRING) AS DOUBLE)
                     - CAST(1 AS DOUBLE)) * CAST(100 AS DOUBLE)
                        AS total_ret_pct
             FROM dd GROUP BY segment
@@ -4535,47 +4177,10 @@ def fin_martin_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     doesn't. Exactness: drawdowns are the fin_ulcer_index q6 BIGINT
     recipe (quantize BEFORE squaring, exact DECIMAL square sums, one
     sqrt edge); the period return takes first/last daily revenue via
-    arg_min/arg_max on the unique date key (Spark min_by/max_by twin
-    — deterministic, no order-dependent pick); the ratio is one
+    min_by/max_by on the unique date key (deterministic, no
+    order-dependent pick); the ratio is one
     guarded double division (ulcer > 0 identical predicate — an
     all-peak segment NULLs both engines). Distributed shape: the
     fin_ulcer_index plan plus two arg-extremes in the same
     per-segment agg — windows on calendar-bounded rows only."""
-    daily = seg_daily(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy("d").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    dd = daily.select(
-        "segment",
-        "d",
-        "x",
-        dd_q6(F.max("x").over(w), F.col("x"))
-        .alias("ddq"),
-    )
-    ulcer = (
-        F.sqrt(
-            as_d(
-                F.sum(F.col("ddq").cast("decimal(19,0)") * F.col("ddq"))
-                .cast("decimal(38,0)")
-            )
-            / F.count(F.lit(1)).cast("double")
-        )
-        / F.lit(1e6)
-    )
-    tot_ret = (
-        as_d(F.max_by("x", "d")) / as_d(F.min_by("x", "d"))
-        - F.lit(1).cast("double")
-    ) * F.lit(100).cast("double")
-    per = dd.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        ulcer.alias("ulcer"),
-        tot_ret.alias("total_ret_pct"),
-    )
-    return per.select(
-        "segment",
-        "n_days",
-        "total_ret_pct",
-        "ulcer",
-        F.when(F.col("ulcer") > 0, F.col("total_ret_pct") / F.col("ulcer"))
-        .alias("martin_ratio"),
-    ).orderBy("segment")
+    return run_sql(spark, sf_dir, "fin_martin_ratio")

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import o_dsum, o_ordered_fold_sum
 from finance_etl_spark.io.readers import load_table
-from finance_etl_spark.plans.recipes import EVENT_DAILY_RN_SQL, SEG_DAILY_SQL, seg_daily
+from finance_etl_spark.plans.recipes import EVENT_DAILY_RN_SQL, SEG_DAILY_SQL
 from finance_etl_spark.plans.registry import register, run_sql
 
 # ---------------------------------------------------------------------------
@@ -371,9 +371,9 @@ def _skew_audit_sql(label: str, table: str, key: str) -> str:
             SELECT CAST(SUM(k) AS BIGINT) AS n_keys,
                    CAST(SUM(cnt * k) AS BIGINT) AS total_rows,
                    MAX(cnt) AS max_cnt,
-                   MIN(CASE WHEN cum >= (nk_all + 1) // 2
+                   MIN(CASE WHEN cum >= CAST(FLOOR((nk_all + 1) / 2) AS BIGINT)
                             THEN cnt END) AS p50_cnt,
-                   MIN(CASE WHEN cum >= (99 * nk_all + 99) // 100
+                   MIN(CASE WHEN cum >= CAST(FLOOR((99 * nk_all + 99) / 100) AS BIGINT)
                             THEN cnt END) AS p99_cnt,
                    CAST(SUM(CASE WHEN cnt * nk_all > 5 * tot_all
                                  THEN k ELSE 0 END) AS BIGINT) AS hot_keys
@@ -414,68 +414,7 @@ def obs_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB fact table before committing to a join strategy (the
     operational twin of join_aqe_skew_split / join_salted_hot_key,
     which REACT to the skew this measures). Driver sees 3 rows."""
-    parts = []
-    for label, table, key in _SKEW_AUDITS:
-        t = load_table(spark, sf_dir, table)
-        counts = t.groupBy(key).agg(F.count(F.lit(1)).alias("cnt"))
-        freq = counts.groupBy("cnt").agg(F.count(F.lit(1)).alias("k"))
-        wcum = Window.orderBy("cnt").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        wall = Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        cc = freq.select(
-            "cnt",
-            "k",
-            F.sum("k").over(wcum).alias("cum"),
-            F.sum("k").over(wall).alias("nk_all"),
-            F.sum(F.col("cnt") * F.col("k")).over(wall).alias("tot_all"),
-        )
-        row = cc.agg(
-            F.sum("k").cast("bigint").alias("n_keys"),
-            F.sum(F.col("cnt") * F.col("k")).cast("bigint").alias("total_rows"),
-            F.max("cnt").alias("max_cnt"),
-            F.min(
-                F.when(
-                    F.col("cum") >= F.expr("(nk_all + 1) DIV 2"),
-                    F.col("cnt"),
-                )
-            ).alias("p50_cnt"),
-            F.min(
-                F.when(
-                    F.col("cum") >= F.expr("(99 * nk_all + 99) DIV 100"),
-                    F.col("cnt"),
-                )
-            ).alias("p99_cnt"),
-            F.sum(
-                F.when(
-                    F.col("cnt") * F.col("nk_all")
-                    > F.lit(5) * F.col("tot_all"),
-                    F.col("k"),
-                ).otherwise(F.lit(0))
-            )
-            .cast("bigint")
-            .alias("hot_keys"),
-        ).select(
-            F.lit(label).alias("audit"),
-            "n_keys",
-            "total_rows",
-            "max_cnt",
-            "p50_cnt",
-            "p99_cnt",
-            "hot_keys",
-            (
-                F.col("max_cnt").cast("double")
-                * F.col("n_keys").cast("double")
-                / F.col("total_rows").cast("double")
-            ).alias("skew_ratio"),
-        )
-        parts.append(row)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("audit")
+    return run_sql(spark, sf_dir, "obs_skew_profile")
 
 
 # ---------------------------------------------------------------------------
@@ -827,7 +766,7 @@ def dq_join_fanout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT DISTINCT o_orderkey AS k FROM orders
         ),
         bkt AS (
-            SELECT k, k // 4096 AS b FROM keys
+            SELECT k, CAST(FLOOR(k / 4096) AS BIGINT) AS b FROM keys
         ),
         within AS (
             SELECT b, k,
@@ -874,41 +813,7 @@ def dq_sequential_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-boundary gaps from per-bucket min/max — no unpartitioned
     corpus-scale window anywhere. All exact integers; coverage is one
     edge division (k_max >= k_min by non-emptiness)."""
-    o = load_table(spark, sf_dir, "orders")
-    keys = o.select(F.col("o_orderkey").alias("k")).distinct()
-    bkt = keys.withColumn("b", F.floor(F.col("k") / F.lit(4096)))
-    w_in = Window.partitionBy("b").orderBy("k")
-    within = bkt.select(
-        (F.col("k") - F.lag("k").over(w_in)).alias("gap")
-    ).filter(F.col("gap").isNotNull())
-    bstats = bkt.groupBy("b").agg(
-        F.min("k").cast("bigint").alias("bmin"),
-        F.max("k").cast("bigint").alias("bmax"),
-    )
-    w_b = Window.orderBy("b")
-    cross_gaps = bstats.select(
-        (F.col("bmin") - F.lag("bmax").over(w_b)).alias("gap")
-    ).filter(F.col("gap").isNotNull())
-    allgaps = within.unionByName(cross_gaps)
-    maxgap = allgaps.agg(F.max("gap").alias("maxgap"))
-    tot = keys.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_keys"),
-        F.min("k").cast("bigint").alias("k_min"),
-        F.max("k").cast("bigint").alias("k_max"),
-    )
-    return tot.crossJoin(F.broadcast(maxgap)).select(
-        "n_keys",
-        "k_min",
-        "k_max",
-        (F.col("k_max") - F.col("k_min") + 1 - F.col("n_keys"))
-        .cast("bigint")
-        .alias("missing_keys"),
-        (F.col("maxgap") - 1).cast("bigint").alias("largest_run_missing"),
-        (
-            F.col("n_keys").cast("double")
-            / (F.col("k_max") - F.col("k_min") + 1)
-        ).alias("coverage"),
-    )
+    return run_sql(spark, sf_dir, "dq_sequential_gap_audit")
 
 
 # ---------------------------------------------------------------------------
@@ -932,9 +837,9 @@ def dq_sequential_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         q AS (
             SELECT segment, CAST(n_g AS BIGINT) AS n_days,
-                   CAST(MIN(CASE WHEN r = (n_g + 3) // 4 THEN v END)
+                   CAST(MIN(CASE WHEN r = CAST(FLOOR((n_g + 3) / 4) AS BIGINT) THEN v END)
                         AS BIGINT) AS q1,
-                   CAST(MIN(CASE WHEN r = (3 * n_g + 3) // 4 THEN v END)
+                   CAST(MIN(CASE WHEN r = CAST(FLOOR((3 * n_g + 3) / 4) AS BIGINT) THEN v END)
                         AS BIGINT) AS q3
             FROM rn GROUP BY segment, n_g
         )
@@ -961,58 +866,7 @@ def dq_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     to stay in integers. Per-segment rank windows ride the calendar-
     bounded daily relation; the fence count is one broadcast join back
     over the same bounded rows."""
-    daily = seg_daily(spark, sf_dir)
-    cents = daily.select(
-        "segment", "d", (F.col("x") * 100).cast("bigint").alias("v")
-    )
-    wseg = Window.partitionBy("segment")
-    rn = cents.select(
-        "segment",
-        "v",
-        F.row_number().over(wseg.orderBy("v", "d")).alias("r"),
-        F.count(F.lit(1)).over(wseg).alias("n_g"),
-    )
-    q = rn.groupBy("segment", "n_g").agg(
-        F.min(
-            F.when(F.col("r") == F.floor((F.col("n_g") + 3) / 4), F.col("v"))
-        )
-        .cast("bigint")
-        .alias("q1"),
-        F.min(
-            F.when(
-                F.col("r") == F.floor((3 * F.col("n_g") + 3) / 4), F.col("v")
-            )
-        )
-        .cast("bigint")
-        .alias("q3"),
-    )
-    iqr = F.col("q3") - F.col("q1")
-    return (
-        cents.join(F.broadcast(q), "segment")
-        .groupBy("segment", "n_g", "q1", "q3")
-        .agg(
-            F.sum(
-                F.when(2 * F.col("v") < 2 * F.col("q1") - 3 * iqr, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_low"),
-            F.sum(
-                F.when(2 * F.col("v") > 2 * F.col("q3") + 3 * iqr, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_high"),
-        )
-        .select(
-            "segment",
-            F.col("n_g").cast("bigint").alias("n_days"),
-            F.col("q1").alias("q1_cents"),
-            F.col("q3").alias("q3_cents"),
-            iqr.alias("iqr_cents"),
-            "n_low",
-            "n_high",
-        )
-        .orderBy("segment")
-    )
+    return run_sql(spark, sf_dir, "dq_tukey_fences")
 
 
 # ---------------------------------------------------------------------------

@@ -826,17 +826,17 @@ _KF_STATS = {
         betas AS MATERIALIZED (
             SELECT fold,
                    {", ".join(
-                       f"CAST(CAST(t_{k} - f_{k} AS VARCHAR) AS DOUBLE) AS {k}"
+                       f"CAST(CAST(t_{k} - f_{k} AS STRING) AS DOUBLE) AS {k}"
                        for k in _KF_STATS
                    )}
             FROM fold_stats CROSS JOIN total
         ),
         scored AS (
             SELECT f.fold,
-                   CAST(CAST(f.y AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(f.y AS STRING) AS DOUBLE)
                      - ({_OLS_BETAS['beta0']}
-                        + ({_OLS_BETAS['beta1']}) * CAST(CAST(f.x1 AS VARCHAR) AS DOUBLE)
-                        + ({_OLS_BETAS['beta2']}) * CAST(CAST(f.x2 AS VARCHAR) AS DOUBLE)) AS resid
+                        + ({_OLS_BETAS['beta1']}) * CAST(CAST(f.x1 AS STRING) AS DOUBLE)
+                        + ({_OLS_BETAS['beta2']}) * CAST(CAST(f.x2 AS STRING) AS DOUBLE)) AS resid
             FROM feat f JOIN betas b ON b.fold = f.fold
         )
         SELECT fold,
@@ -2388,15 +2388,15 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(pos) OVER () AS BIGINT) AS tp
             FROM per_val
         ),
-        ks AS (SELECT unnest(generate_series(1, 10)) AS decile)
+        ks AS (SELECT decile FROM range(1, 10 + 1) AS t(decile))
         SELECT k.decile,
                CAST(MIN(c.cw) AS BIGINT) AS cum_n,
-               CAST(arg_min(c.cp, c.cw) AS BIGINT) AS cum_pos,
+               CAST(min_by(c.cp, c.cw) AS BIGINT) AS cum_pos,
                MIN(c.tw) AS total_n,
                MIN(c.tp) AS total_pos,
-               CAST(arg_min(c.cp, c.cw) AS DOUBLE) / CAST(MIN(c.tp) AS DOUBLE)
+               CAST(min_by(c.cp, c.cw) AS DOUBLE) / CAST(MIN(c.tp) AS DOUBLE)
                    AS gain,
-               CAST(arg_min(c.cp, c.cw) * MIN(c.tw) AS DOUBLE)
+               CAST(min_by(c.cp, c.cw) * MIN(c.tw) AS DOUBLE)
                  / CAST(MIN(c.cw) * MIN(c.tp) AS DOUBLE) AS lift
         FROM cum c JOIN ks k ON c.cw * 10 >= k.decile * c.tw
         GROUP BY k.decile
@@ -2413,95 +2413,7 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-decile row at a cut is picked by min_by/arg_min on the
     strictly-increasing cumulative count (deterministic). Gains and
     lift are double edges over exact integer cross-products."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    per_val = (
-        o.groupBy(F.col("o_totalprice").alias("x"))
-        .agg(
-            F.count(F.lit(1)).alias("w"),
-            F.sum((F.col("o_orderstatus") == "F").cast("int"))
-            .cast("bigint")
-            .alias("pos"),
-        )
-        .withColumn(
-            # DESC cut: bucket on the NEGATED value so ascending bucket
-            # order walks scores from high to low
-            "bkt",
-            F.floor(-F.col("x") / F.lit(10000)).cast("long"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy(F.col("x").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        per_val.groupBy("bkt")
-        .agg(F.sum("w").alias("tb"), F.sum("pos").alias("pb"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("tb").over(w_carry), F.lit(0)).alias("cb"),
-            F.coalesce(F.sum("pb").over(w_carry), F.lit(0)).alias("cpb"),
-            F.sum("tb")
-            .over(
-                Window.partitionBy().rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("tw"),
-            F.sum("pb")
-            .over(
-                Window.partitionBy().rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("tp"),
-        )
-    )
-    cum = (
-        per_val.select(
-            "bkt",
-            "x",
-            F.sum("w").over(w_in).alias("win"),
-            F.sum("pos").over(w_in).alias("pin"),
-        )
-        .join(F.broadcast(carry), "bkt")
-        .select(
-            (F.col("win") + F.col("cb")).cast("bigint").alias("cw"),
-            (F.col("pin") + F.col("cpb")).cast("bigint").alias("cp"),
-            F.col("tw").cast("bigint").alias("tw"),
-            F.col("tp").cast("bigint").alias("tp"),
-        )
-    )
-    ks = spark.range(1, 11).select(F.col("id").alias("decile"))
-    g = (
-        cum.join(
-            F.broadcast(ks), F.col("cw") * 10 >= F.col("decile") * F.col("tw")
-        )
-        .groupBy("decile")
-        .agg(
-            F.min("cw").alias("cum_n"),
-            F.min_by("cp", "cw").alias("cum_pos"),
-            F.min("tw").alias("total_n"),
-            F.min("tp").alias("total_pos"),
-        )
-    )
-    return g.select(
-        "decile",
-        "cum_n",
-        "cum_pos",
-        "total_n",
-        "total_pos",
-        (F.col("cum_pos").cast("double") / F.col("total_pos").cast("double")).alias(
-            "gain"
-        ),
-        (
-            (F.col("cum_pos") * F.col("total_n")).cast("double")
-            / (F.col("cum_n") * F.col("total_pos")).cast("double")
-        ).alias("lift"),
-    ).orderBy("decile")
+    return run_sql(spark, sf_dir, "ml_lift_gains_table")
 
 
 @register(
@@ -2668,14 +2580,14 @@ _LC_FRACS = ((10, 9), (25, 22), (50, 45), (75, 67), (100, 90))
         ),
         betas AS MATERIALIZED (
             SELECT frac_pct, n,
-                   (CAST(n AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-                    - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                      * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
-                   / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-                      - CAST(CAST(sx AS VARCHAR) AS DOUBLE)
-                        * CAST(CAST(sx AS VARCHAR) AS DOUBLE)) AS b1,
-                   CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS syd,
-                   CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS sxd
+                   (CAST(n AS DOUBLE) * CAST(CAST(sxy AS STRING) AS DOUBLE)
+                    - CAST(CAST(sx AS STRING) AS DOUBLE)
+                      * CAST(CAST(sy AS STRING) AS DOUBLE))
+                   / (CAST(n AS DOUBLE) * CAST(CAST(sxx AS STRING) AS DOUBLE)
+                      - CAST(CAST(sx AS STRING) AS DOUBLE)
+                        * CAST(CAST(sx AS STRING) AS DOUBLE)) AS b1,
+                   CAST(CAST(sy AS STRING) AS DOUBLE) AS syd,
+                   CAST(CAST(sx AS STRING) AS DOUBLE) AS sxd
             FROM stats
         ),
         models AS MATERIALIZED (
@@ -2685,8 +2597,8 @@ _LC_FRACS = ((10, 9), (25, 22), (50, 45), (75, 67), (100, 90))
         ),
         scored AS (
             SELECT m.frac_pct, m.n, m.b0, m.b1,
-                   CAST(CAST(f.y AS VARCHAR) AS DOUBLE)
-                     - (m.b0 + m.b1 * CAST(CAST(f.x AS VARCHAR) AS DOUBLE))
+                   CAST(CAST(f.y AS STRING) AS DOUBLE)
+                     - (m.b0 + m.b1 * CAST(CAST(f.x AS STRING) AS DOUBLE))
                        AS resid
             FROM feat f CROSS JOIN models m
             WHERE f.bkt >= 90
@@ -2715,78 +2627,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 5 models broadcast into ONE scoring scan of the fixed holdout
     whose residual² reduces via the floor-scaled engine-agnostic sum.
     Two scans total regardless of the number of curve points."""
-    li = load_table(spark, sf_dir, "lineitem")
-    feat = li.select(
-        (F.col("l_orderkey") % 100).cast("int").alias("bkt"),
-        F.col("l_quantity").cast("decimal(20,2)").alias("x"),
-        F.col("l_extendedprice").cast("decimal(20,2)").alias("y"),
-    )
-    fracs = spark.createDataFrame(
-        list(_LC_FRACS), "frac_pct int, thr int"
-    )
-    stats = (
-        feat.filter(F.col("bkt") < 90)
-        .join(F.broadcast(fracs), F.col("bkt") < F.col("thr"))
-        .groupBy("frac_pct")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        )
-    )
-    nd = F.col("n").cast("double")
-    sxd = F.col("sx").cast("string").cast("double")
-    syd = F.col("sy").cast("string").cast("double")
-    sxxd = F.col("sxx").cast("string").cast("double")
-    sxyd = F.col("sxy").cast("string").cast("double")
-    b1 = (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd)
-    models = stats.select(
-        "frac_pct",
-        "n",
-        b1.alias("b1"),
-        syd.alias("syd"),
-        sxd.alias("sxd"),
-    ).select(
-        "frac_pct",
-        "n",
-        "b1",
-        ((F.col("syd") - F.col("b1") * F.col("sxd")) / F.col("n").cast("double")).alias(
-            "b0"
-        ),
-    )
-    scored = (
-        feat.filter(F.col("bkt") >= 90)
-        .crossJoin(F.broadcast(models))
-        .select(
-            "frac_pct",
-            "n",
-            "b0",
-            "b1",
-            (
-                F.col("y").cast("string").cast("double")
-                - (
-                    F.col("b0")
-                    + F.col("b1") * F.col("x").cast("string").cast("double")
-                )
-            ).alias("resid"),
-        )
-    )
-    return (
-        scored.groupBy("frac_pct")
-        .agg(
-            F.min("n").alias("n_train"),
-            F.count(F.lit(1)).cast("bigint").alias("n_test"),
-            F.min("b0").alias("beta0"),
-            F.min("b1").alias("beta1"),
-            F.sqrt(
-                fsum(F.col("resid") * F.col("resid"))
-                / F.count(F.lit(1)).cast("double")
-            ).alias("rmse_test"),
-        )
-        .orderBy("frac_pct")
-    )
+    return run_sql(spark, sf_dir, "ml_learning_curve")
 
 
 @register(
@@ -3428,8 +3269,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                    END AS n_wrong,
                    tot_n
             FROM cum
-            CROSS JOIN (SELECT unnest(['left_pos', 'left_neg'])
-                        AS polarity) pol
+            CROSS JOIN (SELECT polarity FROM (VALUES ('left_pos'), ('left_neg')) AS t(polarity)) pol
             WHERE cum_n < tot_n
         ),
         best AS (
@@ -3464,78 +3304,7 @@ def ml_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-mass-to-errors property) are single double edge expressions,
     NULL-guarded for the degenerate perfect/degenerate-worst stump on
     both engines. Deterministic tiebreak: (n_wrong, bin, polarity)."""
-    from pyspark.sql import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    rng = li.agg(
-        F.min("l_extendedprice").cast("double").alias("xmin"),
-        F.max("l_extendedprice").cast("double").alias("xmax"),
-    )
-    hist = (
-        li.crossJoin(F.broadcast(rng))
-        .select(
-            F.least(
-                F.lit(_STUMP_BINS - 1),
-                F.floor(
-                    (F.col("l_extendedprice").cast("double") - F.col("xmin"))
-                    / ((F.col("xmax") - F.col("xmin")) / F.lit(float(_STUMP_BINS)))
-                ).cast("int"),
-            ).alias("bin"),
-            (F.col("l_returnflag") == "R").cast("int").alias("pos"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("pos").cast("bigint").alias("n_pos"),
-        )
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    cum = hist.select(
-        "bin",
-        F.sum("n").over(w).cast("bigint").alias("cum_n"),
-        F.sum("n_pos").over(w).cast("bigint").alias("cum_pos"),
-        F.sum("n").over(wall).cast("bigint").alias("tot_n"),
-        F.sum("n_pos").over(wall).cast("bigint").alias("tot_pos"),
-    ).filter(F.col("cum_n") < F.col("tot_n"))
-    pol = spark.createDataFrame(
-        [("left_pos",), ("left_neg",)], "polarity string"
-    )
-    cand = cum.crossJoin(F.broadcast(pol)).select(
-        "bin",
-        "polarity",
-        F.when(
-            F.col("polarity") == "left_pos",
-            (F.col("cum_n") - F.col("cum_pos"))
-            + (F.col("tot_pos") - F.col("cum_pos")),
-        )
-        .otherwise(
-            F.col("cum_pos")
-            + (F.col("tot_n") - F.col("cum_n"))
-            - (F.col("tot_pos") - F.col("cum_pos"))
-        )
-        .alias("n_wrong"),
-        "tot_n",
-    )
-    best = cand.orderBy("n_wrong", "bin", "polarity").limit(1)
-    wrong_d = F.col("n_wrong").cast("double")
-    tot_d = F.col("tot_n").cast("double")
-    return best.select(
-        F.col("bin").cast("int").alias("split_bin"),
-        "polarity",
-        F.col("n_wrong").cast("bigint").alias("n_wrong"),
-        F.col("tot_n").cast("bigint").alias("n"),
-        (wrong_d / tot_d).alias("err"),
-        F.when(
-            (F.col("n_wrong") > 0) & (F.col("n_wrong") < F.col("tot_n")),
-            F.lit(0.5) * F.log((tot_d - wrong_d) / wrong_d),
-        ).alias("alpha"),
-        F.when(F.col("n_wrong") > 0, F.lit(1.0) / (2 * wrong_d)).alias("w_wrong"),
-        F.when(
-            F.col("n_wrong") < F.col("tot_n"),
-            F.lit(1.0) / (2 * (tot_d - wrong_d)),
-        ).alias("w_right"),
-    )
+    return run_sql(spark, sf_dir, "ml_adaboost_round")
 
 
 @register(
@@ -3579,43 +3348,7 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (co DESC, i1, i2) — hash-stable — and cosine rides along as a
     value. This is the classic 'customers who bought X also bought Y'
     batch job every retail warehouse runs."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .distinct()
-    )
-    n = p.groupBy("i").agg(F.count(F.lit(1)).cast("bigint").alias("ni"))
-    a = p.select(F.col("u"), F.col("i").alias("i1"))
-    b = p.select(F.col("u").alias("u2"), F.col("i").alias("i2"))
-    co = (
-        a.join(b, (F.col("u") == F.col("u2")) & (F.col("i1") < F.col("i2")))
-        .groupBy("i1", "i2")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("co"))
-    )
-    top = co.orderBy(F.col("co").desc(), "i1", "i2").limit(50)
-    na = n.select(F.col("i").alias("i1"), F.col("ni").alias("n1"))
-    nb = n.select(F.col("i").alias("i2"), F.col("ni").alias("n2"))
-    return (
-        top.join(na, "i1")
-        .join(nb, "i2")
-        .select(
-            "i1",
-            "i2",
-            "co",
-            "n1",
-            "n2",
-            (
-                F.col("co").cast("double")
-                / (
-                    F.sqrt(F.col("n1").cast("double"))
-                    * F.sqrt(F.col("n2").cast("double"))
-                )
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("co").desc(), "i1", "i2")
-    )
+    return run_sql(spark, sf_dir, "ml_item_item_cf")
 
 
 @register(
@@ -5226,16 +4959,13 @@ def ml_cost_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         s AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(21,2)) * y)
-                        AS VARCHAR) AS DOUBLE) AS sxy,
-                   CAST(CAST(SUM(x*x) AS VARCHAR) AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(y*y) AS VARCHAR) AS DOUBLE) AS syy
+                        AS STRING) AS DOUBLE) AS sxy,
+                   CAST(CAST(SUM(x*x) AS STRING) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(y*y) AS STRING) AS DOUBLE) AS syy
             FROM feat
         ),
         grid AS (
-            SELECT unnest([CAST(0.0001 AS DOUBLE), CAST(0.0005 AS DOUBLE),
-                           CAST(0.001 AS DOUBLE), CAST(0.005 AS DOUBLE)])
-                       AS lr
-        ),
+            SELECT lr FROM (VALUES (CAST(0.0001 AS DOUBLE)), (CAST(0.0005 AS DOUBLE)), (CAST(0.001 AS DOUBLE)), (CAST(0.005 AS DOUBLE))) AS t(lr)),
         stepped AS (
             SELECT g.lr, s.n,
                    g.lr * 2 * s.sxy / s.n AS w1,
@@ -5260,38 +4990,7 @@ def ml_lr_grid_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-trial rescan. All shared double expressions over exact decimal
     sums; too-large rates show loss DIVERGENCE (improvement < 0),
     pytest-pinned against numpy."""
-    li = load_table(spark, sf_dir, "lineitem")
-    feat = li.select(
-        F.col("l_quantity").cast("decimal(20,2)").alias("x"),
-        (F.col("l_discount").cast("decimal(20,2)") * 10).alias("y"),
-    )
-    s = feat.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum(F.col("x").cast("decimal(21,2)") * F.col("y"))).alias("sxy"),
-        as_d(F.sum(F.col("x") * F.col("x"))).alias("sxx"),
-        as_d(F.sum(F.col("y") * F.col("y"))).alias("syy"),
-    )
-    grid = spark.createDataFrame(
-        [(0.0001,), (0.0005,), (0.001,), (0.005,)], "lr double"
-    )
-    nd_ = F.col("n").cast("double")
-    w1 = F.col("lr") * 2 * F.col("sxy") / nd_
-    loss1 = (
-        F.col("syy") - 2 * w1 * F.col("sxy") + w1 * w1 * F.col("sxx")
-    ) / nd_
-    loss0 = F.col("syy") / nd_
-    return (
-        grid.crossJoin(F.broadcast(s))
-        .select(
-            "lr",
-            "n",
-            w1.alias("w1"),
-            loss0.alias("loss0"),
-            loss1.alias("loss1"),
-            ((loss0 - loss1) / loss0).alias("improvement"),
-        )
-        .orderBy("lr")
-    )
+    return run_sql(spark, sf_dir, "ml_lr_grid_one_step")
 
 
 # ---------------------------------------------------------------------------
@@ -5648,10 +5347,8 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH grid AS (
             SELECT tau.t AS tau, 3000 + 50 * b.j AS b
-            FROM (SELECT unnest([CAST(0.25 AS DECIMAL(3,2)),
-                                 CAST(0.50 AS DECIMAL(3,2)),
-                                 CAST(0.75 AS DECIMAL(3,2))]) AS t) tau
-            CROSS JOIN (SELECT unnest(generate_series(0, 40)) AS j) b
+            FROM (SELECT t FROM (VALUES (CAST(0.25 AS DECIMAL(3,2))), (CAST(0.50 AS DECIMAL(3,2))), (CAST(0.75 AS DECIMAL(3,2)))) AS t(t)) tau
+            CROSS JOIN (SELECT j FROM range(0, 40 + 1) AS t(j)) b
         ),
         losses AS (
             SELECT g.tau, g.b,
@@ -5674,9 +5371,9 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       ORDER BY loss, b) AS rk
             FROM losses
         )
-        SELECT CAST(CAST(tau AS VARCHAR) AS DOUBLE) AS tau,
+        SELECT CAST(CAST(tau AS STRING) AS DOUBLE) AS tau,
                CAST(b AS BIGINT) AS best_b,
-               CAST(CAST(loss AS VARCHAR) AS DOUBLE) AS check_loss
+               CAST(CAST(loss AS STRING) AS DOUBLE) AS check_loss
         FROM ranked WHERE rk = 1
         ORDER BY tau
     """,
@@ -6420,9 +6117,7 @@ def ml_ips_offpolicy(spark: SparkSession, sf_dir: str) -> DataFrame:
                       + b.beta * b.beta * conf.fn + conf.fp)
                END AS fbeta
         FROM conf
-        CROSS JOIN (SELECT unnest([CAST(0.5 AS DOUBLE),
-                                   CAST(1.0 AS DOUBLE),
-                                   CAST(2.0 AS DOUBLE)]) AS beta) b
+        CROSS JOIN (SELECT beta FROM (VALUES (CAST(0.5 AS DOUBLE)), (CAST(1.0 AS DOUBLE)), (CAST(2.0 AS DOUBLE))) AS t(beta)) b
         ORDER BY b.beta
     """,
 )
@@ -6437,56 +6132,7 @@ def ml_fbeta_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells are exact integers from one agg, fanned over a broadcast
     3-row beta grid. Fb NULLs only when tp=fp=fn=0 (no positives
     anywhere — impossible on this fixture, guarded identically)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    conf = li.agg(
-        F.sum(
-            F.when(
-                (F.col("l_quantity") >= 25) & (F.col("l_returnflag") == "R"),
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("tp"),
-        F.sum(
-            F.when(
-                (F.col("l_quantity") >= 25) & (F.col("l_returnflag") != "R"),
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("fp"),
-        F.sum(
-            F.when(
-                (F.col("l_quantity") < 25) & (F.col("l_returnflag") == "R"),
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("fn"),
-    )
-    betas = spark.createDataFrame([(0.5,), (1.0,), (2.0,)], "beta double")
-    b2 = F.col("beta") * F.col("beta")
-    denom = (1 + b2) * F.col("tp") + b2 * F.col("fn") + F.col("fp")
-    return (
-        conf.crossJoin(F.broadcast(betas))
-        .select(
-            "beta",
-            "tp",
-            "fp",
-            "fn",
-            (F.col("tp").cast("double") / (F.col("tp") + F.col("fp"))).alias(
-                "precision_"
-            ),
-            (F.col("tp").cast("double") / (F.col("tp") + F.col("fn"))).alias(
-                "recall_"
-            ),
-            F.when(
-                denom > 0,
-                (1 + b2) * F.col("tp").cast("double") / denom,
-            ).alias("fbeta"),
-        )
-        .orderBy("beta")
-    )
+    return run_sql(spark, sf_dir, "ml_fbeta_grid")
 
 
 # ---------------------------------------------------------------------------
@@ -7438,22 +7084,22 @@ def ml_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM documents GROUP BY lang, source
         ),
         sij AS (
-            SELECT CAST(SUM((nij * (nij - 1)) // 2) AS BIGINT) AS sum_ij
+            SELECT CAST(SUM(CAST(FLOOR((nij * (nij - 1)) / 2) AS BIGINT)) AS BIGINT) AS sum_ij
             FROM cells
         ),
         sa AS (
-            SELECT CAST(SUM((ai * (ai - 1)) // 2) AS BIGINT) AS sum_a
+            SELECT CAST(SUM(CAST(FLOOR((ai * (ai - 1)) / 2) AS BIGINT)) AS BIGINT) AS sum_a
             FROM (SELECT CAST(SUM(nij) AS BIGINT) AS ai
                   FROM cells GROUP BY lang)
         ),
         sb AS (
-            SELECT CAST(SUM((bj * (bj - 1)) // 2) AS BIGINT) AS sum_b
+            SELECT CAST(SUM(CAST(FLOOR((bj * (bj - 1)) / 2) AS BIGINT)) AS BIGINT) AS sum_b
             FROM (SELECT CAST(SUM(nij) AS BIGINT) AS bj
                   FROM cells GROUP BY source)
         ),
         tot AS (
             SELECT CAST(SUM(nij) AS BIGINT) AS n,
-                   CAST((SUM(nij) * (SUM(nij) - 1)) // 2 AS BIGINT) AS c2n
+                   CAST(FLOOR((SUM(nij) * (SUM(nij) - 1)) / 2) AS BIGINT) AS c2n
             FROM cells
         )
         SELECT n, sum_ij, sum_a, sum_b, c2n,
@@ -7479,65 +7125,14 @@ def ml_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement number used to score a clustering (e.g. the semantic-
     dedup k-means) against any reference labeling: ARI = (sum_ij C2 -
     E) / ((sum_a + sum_b)/2 - E), E = sum_a*sum_b/C2(n). Exactness:
-    every C(x,2) = x(x-1) DIV 2 is an exact BIGINT (the product is
+    every C(x,2) = FLOOR(x(x-1) / 2) is an exact BIGINT (the product is
     always even), so the three pair sums and C2(n) are exact integers;
     ARI is one double expression parenthesized identically on both
     engines, NULL-guarded on the degenerate both-trivial-partitions
     case with the IDENTICAL predicate. Distributed shape: one
     contingency hash agg (cells bounded by |langs| x |sources|), then
     scalar state."""
-    d = load_table_parallel(spark, sf_dir, "documents")
-    cells = d.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("nij")
-    )
-    sij = cells.agg(
-        F.sum(F.expr("CAST((nij * (nij - 1)) DIV 2 AS BIGINT)"))
-        .cast("bigint")
-        .alias("sum_ij")
-    )
-    sa = (
-        cells.groupBy("lang")
-        .agg(F.sum("nij").cast("bigint").alias("ai"))
-        .agg(
-            F.sum(F.expr("CAST((ai * (ai - 1)) DIV 2 AS BIGINT)"))
-            .cast("bigint")
-            .alias("sum_a")
-        )
-    )
-    sb = (
-        cells.groupBy("source")
-        .agg(F.sum("nij").cast("bigint").alias("bj"))
-        .agg(
-            F.sum(F.expr("CAST((bj * (bj - 1)) DIV 2 AS BIGINT)"))
-            .cast("bigint")
-            .alias("sum_b")
-        )
-    )
-    tot = cells.agg(
-        F.sum("nij").cast("bigint").alias("n"),
-        F.expr(
-            "CAST((SUM(nij) * (SUM(nij) - 1)) DIV 2 AS BIGINT)"
-        ).alias("c2n"),
-    )
-    two = F.lit(2).cast("double")
-    e_term = (
-        F.col("sum_a").cast("double")
-        * F.col("sum_b").cast("double")
-        / F.col("c2n").cast("double")
-    )
-    m_term = (
-        F.col("sum_a").cast("double") + F.col("sum_b").cast("double")
-    ) / two
-    ari = F.when(
-        m_term != e_term,
-        (F.col("sum_ij").cast("double") - e_term) / (m_term - e_term),
-    )
-    return (
-        sij.crossJoin(F.broadcast(sa))
-        .crossJoin(F.broadcast(sb))
-        .crossJoin(F.broadcast(tot))
-        .select("n", "sum_ij", "sum_a", "sum_b", "c2n", ari.alias("ari"))
-    )
+    return run_sql(spark, sf_dir, "ml_cluster_ari")
 
 
 # ---------------------------------------------------------------------------
@@ -7563,7 +7158,7 @@ def ml_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
                        (CAST(c.nij AS DOUBLE) * CAST(t.n AS DOUBLE))
                        / (CAST(a.ai AS DOUBLE) * CAST(b.bj AS DOUBLE))
                      ) AS DECIMAL(12,6))
-                   ) AS VARCHAR) AS DOUBLE) AS mi_n
+                   ) AS STRING) AS DOUBLE) AS mi_n
             FROM cells c
             JOIN ai a ON a.lang = c.lang
             JOIN bj b ON b.source = c.source
@@ -7574,7 +7169,7 @@ def ml_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
                      a.ai * CAST(ln(CAST(a.ai AS DOUBLE)
                                     / CAST(t.n AS DOUBLE))
                              AS DECIMAL(12,6))
-                   ) AS VARCHAR) AS DOUBLE) AS hx_n
+                   ) AS STRING) AS DOUBLE) AS hx_n
             FROM ai a CROSS JOIN tot t
         ),
         hy_sum AS (
@@ -7582,7 +7177,7 @@ def ml_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
                      b.bj * CAST(ln(CAST(b.bj AS DOUBLE)
                                     / CAST(t.n AS DOUBLE))
                              AS DECIMAL(12,6))
-                   ) AS VARCHAR) AS DOUBLE) AS hy_n
+                   ) AS STRING) AS DOUBLE) AS hy_n
             FROM bj b CROSS JOIN tot t
         )
         SELECT n,
@@ -7608,58 +7203,7 @@ def ml_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio are shared double expressions parenthesized identically.
     Distributed shape: one contingency hash agg, margins broadcast
     (|langs| and |sources| are content-bounded), scalar state after."""
-    d = load_table_parallel(spark, sf_dir, "documents")
-    cells = d.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("nij")
-    )
-    ai = cells.groupBy("lang").agg(F.sum("nij").cast("bigint").alias("ai"))
-    bj = cells.groupBy("source").agg(
-        F.sum("nij").cast("bigint").alias("bj")
-    )
-    tot = cells.agg(F.sum("nij").cast("bigint").alias("n"))
-    mi_ln = F.log(
-        (F.col("nij").cast("double") * F.col("n").cast("double"))
-        / (F.col("ai").cast("double") * F.col("bj").cast("double"))
-    ).cast("decimal(12,6)")
-    mi_sum = (
-        cells.join(F.broadcast(ai), "lang")
-        .join(F.broadcast(bj), "source")
-        .crossJoin(F.broadcast(tot))
-        .agg(as_d(F.sum(F.col("nij") * mi_ln)).alias("mi_n"))
-    )
-    hx_ln = F.log(
-        F.col("ai").cast("double") / F.col("n").cast("double")
-    ).cast("decimal(12,6)")
-    hx_sum = (
-        ai.crossJoin(F.broadcast(tot))
-        .agg((-as_d(F.sum(F.col("ai") * hx_ln))).alias("hx_n"))
-    )
-    hy_ln = F.log(
-        F.col("bj").cast("double") / F.col("n").cast("double")
-    ).cast("decimal(12,6)")
-    hy_sum = (
-        bj.crossJoin(F.broadcast(tot))
-        .agg((-as_d(F.sum(F.col("bj") * hy_ln))).alias("hy_n"))
-    )
-    nd = F.col("n").cast("double")
-    mi = F.col("mi_n") / nd
-    hx = F.col("hx_n") / nd
-    hy = F.col("hy_n") / nd
-    nmi = F.when(
-        hx + hy > F.lit(0).cast("double"), F.lit(2).cast("double") * mi / (hx + hy)
-    )
-    return (
-        mi_sum.crossJoin(F.broadcast(hx_sum))
-        .crossJoin(F.broadcast(hy_sum))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "n",
-            mi.alias("mi"),
-            hx.alias("hx"),
-            hy.alias("hy"),
-            nmi.alias("nmi"),
-        )
-    )
+    return run_sql(spark, sf_dir, "ml_cluster_nmi")
 
 
 # ---------------------------------------------------------------------------

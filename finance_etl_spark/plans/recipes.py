@@ -362,7 +362,7 @@ STRONG_TRADE_CTE = """
                    CAST(SUM(w) AS BIGINT) AS w
             FROM e WHERE src <> dst GROUP BY a, b
         ),
-        thr AS MATERIALIZED (SELECT quantile_cont(w, 0.6) AS t FROM u),
+        thr AS MATERIALIZED (SELECT percentile_cont(0.6) WITHIN GROUP (ORDER BY w) AS t FROM u),
         ku AS MATERIALIZED (SELECT a, b FROM u, thr WHERE w >= t)"""
 
 # STRONG_TRADE_CTE plus the symmetric neighbour list and node degrees.

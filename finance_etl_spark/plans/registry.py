@@ -57,12 +57,53 @@ their fixes — check new queries against all three:
 New-query checklist, first item: write the query once. When Spark and
 DuckDB both parse the oracle text and return the same rows, names and
 types, the builder is ``return run_sql(spark, sf_dir, "<name>")`` and
-there is no DataFrame twin. Spell casts ``CAST(x AS STRING)``: DuckDB
-reads STRING as VARCHAR, Spark has no bare VARCHAR. Keep a DataFrame
+there is no DataFrame twin (tests/test_recipes.py::
+test_parseable_oracles_are_written_once fails on a builder whose oracle
+parses on Spark and that is not on its keep-list). Keep a DataFrame
 builder only where it exercises a Spark-only path (operators, UDFs,
 streams, sinks) or where the text is slower at sf0.1 or scales worse
 (a ``NOT IN`` subquery inside an aggregate plans as a null-aware
 nested-loop join; a pairwise ``a.x > b.x`` join is quadratic).
+
+Spellings both engines parse, for DuckDB-only ones:
+- ``CAST(x AS STRING)`` for ``CAST(x AS VARCHAR)`` (DuckDB reads STRING
+  as VARCHAR; Spark has no bare VARCHAR)
+- ``percentile_cont(q) WITHIN GROUP (ORDER BY x)`` for
+  ``quantile_cont(x, q)``
+- ``max_by``/``min_by`` for ``arg_max``/``arg_min``; ``instr`` for
+  ``strpos``
+- ``CAST(CAST(b AS DATE) - CAST(a AS DATE) AS BIGINT)`` for
+  ``date_diff('day', a, b)``
+- ``CAST(FLOOR(a / b) AS BIGINT)`` for ``a // b``, only where ``a``
+  cannot be negative and stays below 2**53 (``/`` divides in DOUBLE on
+  both engines)
+- ``SELECT k FROM (VALUES (x), (y)) AS t(k)`` for
+  ``SELECT unnest([x, y]) AS k``, and ``SELECT k FROM range(a, b + 1) AS
+  t(k)`` for ``SELECT unnest(generate_series(a, b)) AS k``
+- ``WITH x AS MATERIALIZED (...)`` stays: run_sql drops the hint before
+  Spark parses the text, and DuckDB can need it (graph_triangle_count:
+  0.042 s at sf0.01 with it, 1.58 s without, out of memory at sf0.1)
+
+Dialect traps, each measured on this registry:
+- ``dayofweek`` is 0-based (Sunday) in DuckDB and 1-based in Spark
+  (ts_seasonal_baseline's oracle parses on Spark and returns other rows).
+- DuckDB's ``//`` truncates toward zero and keeps INTEGER; FLOOR rounds
+  a negative quotient down (fin_cornish_fisher_var's DuckDB rows change
+  under FLOOR).
+- ``CAST(double AS BIGINT)`` rounds in DuckDB and truncates in Spark.
+- ``split(s, ' ')[i]`` is 1-based in DuckDB and 0-based in Spark; use
+  ``split_part``.
+- Without the ``'g'`` option DuckDB's ``regexp_replace`` replaces only
+  the first match; Spark's replaces all.
+- DuckDB casts a ``'0x...'`` string to BIGINT; Spark refuses it
+  (cur_epoch_sample, ml_uplift_qini).
+- ``IGNORE NULLS`` goes inside the call in DuckDB
+  (``last_value(x IGNORE NULLS)``) and after it in Spark
+  (``last_value(x) IGNORE NULLS``); each parser refuses the other's
+  (ts_gap_fill_locf).
+- An oracle that unrolls an iteration is no candidate:
+  graph_pagerank_trade's text did not get through Spark analysis in
+  240 s at sf0.001, while its builder collects in 21 s.
 
 New-query checklist, last item: use the recipe modules; never inline a
 twin. Column-level recipes (dsum/fsum/as_d/ordered_fold_sum and their
@@ -101,6 +142,7 @@ class QuerySpec:
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
+_MATERIALIZED = re.compile(r"\bAS\s+MATERIALIZED\s*\(", re.IGNORECASE)
 
 
 def register(
@@ -133,11 +175,19 @@ def register(
     return deco
 
 
+def spark_text(oracle: str) -> str:
+    """An oracle text as Spark parses it: DuckDB's ``AS MATERIALIZED``
+    CTE hint dropped. Spark has no such syntax, and no oracle calls
+    ``random()`` or ``uuid()``, so evaluating a CTE once or at each
+    reference gives the same rows."""
+    return _MATERIALIZED.sub("AS (", oracle)
+
+
 def run_sql(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Build query ``name`` from its registered oracle text: the one
     string both engines parse runs on Spark over ``load_table`` views of
     the tables it names (temp views of this session, replaced per call)."""
-    text = _REGISTRY[name].oracle
+    text = spark_text(_REGISTRY[name].oracle)
     named = tuple(t for t in TABLES if re.search(rf"\b{t}\b", text))
     register_views(spark, sf_dir, named)
     return spark.sql(text)

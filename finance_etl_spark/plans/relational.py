@@ -772,9 +772,9 @@ def agg_salted_hot_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "percentile"),
     oracle="""
         SELECT o_orderstatus,
-               quantile_cont(o_totalprice, 0.5) AS p50,
-               quantile_cont(o_totalprice, 0.9) AS p90,
-               quantile_cont(o_totalprice, 0.99) AS p99
+               percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS p50,
+               percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice) AS p90,
+               percentile_cont(0.99) WITHIN GROUP (ORDER BY o_totalprice) AS p99
         FROM orders GROUP BY o_orderstatus
     """,
 )
@@ -784,12 +784,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     path for 100-TB cardinalities is percentile_approx (KLL-sketch-
     style, engine-specific — covered rows-only via agg_approx_distinct's
     pattern)."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
-        F.percentile("o_totalprice", 0.5).alias("p50"),
-        F.percentile("o_totalprice", 0.9).alias("p90"),
-        F.percentile("o_totalprice", 0.99).alias("p99"),
-    )
+    return run_sql(spark, sf_dir, "agg_percentiles")
 
 
 @register(
@@ -1701,10 +1696,10 @@ def q16_supplier_part_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "stats", "percentile"),
     oracle="""
         WITH med AS (
-            SELECT quantile_cont(o_totalprice, 0.5) AS m FROM orders
+            SELECT percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS m FROM orders
         )
         SELECT m AS median_price,
-               quantile_cont(abs(o_totalprice - m), 0.5) AS mad
+               percentile_cont(0.5) WITHIN GROUP (ORDER BY abs(o_totalprice - m)) AS mad
         FROM orders, med
         GROUP BY m
     """,
@@ -1718,16 +1713,7 @@ def agg_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     |x − median|. Both passes are plain hash aggregates; swap
     percentile → percentile_approx at 100 TB for a mergeable-sketch
     version with the same plan shape."""
-    o = load_table(spark, sf_dir, "orders").select("o_totalprice")
-    med = o.agg(F.percentile("o_totalprice", 0.5).alias("m"))
-    return (
-        o.crossJoin(F.broadcast(med))
-        .groupBy("m")
-        .agg(
-            F.percentile(F.abs(F.col("o_totalprice") - F.col("m")), 0.5).alias("mad")
-        )
-        .select(F.col("m").alias("median_price"), "mad")
-    )
+    return run_sql(spark, sf_dir, "agg_mad_robust")
 
 
 @register(
@@ -2963,8 +2949,8 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(w) OVER () AS BIGINT) AS tw
             FROM per_val
         ),
-        ks AS (SELECT unnest(generate_series(1, 8)) AS k)
-        SELECT k, CAST(CAST(MIN(x) AS VARCHAR) AS DOUBLE) AS upper_bound,
+        ks AS (SELECT k FROM range(1, 8 + 1) AS t(k))
+        SELECT k, CAST(CAST(MIN(x) AS STRING) AS DOUBLE) AS upper_bound,
                CAST(MIN(cw) AS BIGINT) AS cum_rows,
                MIN(tw) AS total_rows
         FROM cum JOIN ks ON cw * 8 >= k * tw
@@ -2987,49 +2973,7 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partitioned windows + an O(buckets) carry), because the
     distinct value domain IS corpus-scaled — a single global window
     would serialize on one task."""
-    o = load_table(spark, sf_dir, "orders")
-    per_val = o.groupBy(
-        F.col("o_totalprice").cast("decimal(12,2)").alias("x")
-    ).agg(F.count(F.lit(1)).alias("w")).withColumn(
-        "bkt", F.floor(F.col("x") / F.lit(10000)).cast("long")
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_carry = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        per_val.groupBy("bkt")
-        .agg(F.sum("w").alias("tb"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("tb").over(w_carry), F.lit(0)).alias("cb"),
-            F.sum("tb").over(
-                Window.partitionBy().rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ).alias("tw"),
-        )
-    )
-    cum = (
-        per_val.select("bkt", "x", F.sum("w").over(w_in).alias("win"))
-        .join(F.broadcast(carry), "bkt")
-        .select("x", (F.col("win") + F.col("cb")).alias("cw"), "tw")
-    )
-    ks = spark.range(1, 9).select(F.col("id").alias("k"))
-    return (
-        cum.join(F.broadcast(ks), F.col("cw") * 8 >= F.col("k") * F.col("tw"))
-        .groupBy("k")
-        .agg(
-            # VARCHAR-routed DOUBLE presentation (driver DECIMAL-canon
-            # class — see agg_weighted_median)
-            F.min("x").cast("string").cast("double").alias("upper_bound"),
-            F.min("cw").alias("cum_rows"),
-            F.min("tw").alias("total_rows"),
-        )
-        .orderBy("k")
-    )
+    return run_sql(spark, sf_dir, "agg_equidepth_histogram")
 
 
 _RI_RELATIONSHIPS = (
@@ -3669,8 +3613,8 @@ def agg_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         offs AS (
             SELECT dx.v AS dx, dy.v AS dy
-            FROM (SELECT unnest([-1, 0, 1]) AS v) dx
-            CROSS JOIN (SELECT unnest([-1, 0, 1]) AS v) dy
+            FROM (SELECT v FROM (VALUES (-1), (0), (1)) AS t(v)) dx
+            CROSS JOIN (SELECT v FROM (VALUES (-1), (0), (1)) AS t(v)) dy
         ),
         cand AS (
             SELECT p.id AS probe_id, c.id AS cand_id,

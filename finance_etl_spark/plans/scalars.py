@@ -348,8 +348,7 @@ def scalar_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
                weekofyear(o_orderdate) AS iso_week,
                last_day(CAST(o_orderdate AS DATE)) AS month_end,
                CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus_3m,
-               CAST(date_diff('day', CAST(o_orderdate AS DATE),
-                              DATE '1998-12-31') AS INT) AS days_to_eoy
+               CAST(CAST(DATE '1998-12-31' - CAST(o_orderdate AS DATE) AS BIGINT) AS INT) AS days_to_eoy
         FROM orders WHERE o_orderkey <= 2000
     """,
 )
@@ -361,18 +360,7 @@ def scalar_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately absent: Spark counts Sunday=1 where DuckDB counts
     Sunday=0 — an off-by-one trap, so week handling here stays on the
     unambiguous ISO week number)."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
-    d = F.col("o_orderdate").cast("date")
-    return o.select(
-        "o_orderkey",
-        d.alias("d"),
-        F.quarter(d).alias("qtr"),
-        F.dayofyear(d).alias("doy"),
-        F.weekofyear(d).alias("iso_week"),
-        F.last_day(d).alias("month_end"),
-        F.add_months(d, 3).alias("plus_3m"),
-        F.datediff(F.lit("1998-12-31").cast("date"), d).alias("days_to_eoy"),
-    )
+    return run_sql(spark, sf_dir, "scalar_date_arith")
 
 
 @register(
@@ -579,20 +567,20 @@ def scalar_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
                    substr(h, 1, 8), '-',
                    substr(h, 9, 4), '-',
                    '5', substr(h, 14, 3), '-',
-                   CASE WHEN strpos('0123456789abcdef', substr(h, 17, 1))
+                   CASE WHEN instr('0123456789abcdef', substr(h, 17, 1))
                              - 1 < 8
                         THEN concat('8', substr(h, 18, 3))
-                        WHEN strpos('0123456789abcdef', substr(h, 17, 1))
+                        WHEN instr('0123456789abcdef', substr(h, 17, 1))
                              - 1 < 12
                         THEN concat('9', substr(h, 18, 3))
-                        WHEN strpos('0123456789abcdef', substr(h, 17, 1))
+                        WHEN instr('0123456789abcdef', substr(h, 17, 1))
                              - 1 < 14
                         THEN concat('a', substr(h, 18, 3))
                         ELSE concat('b', substr(h, 18, 3)) END, '-',
                    substr(h, 21, 12)) AS order_uuid
         FROM (
             SELECT o_orderkey,
-                   md5('orders#' || CAST(o_orderkey AS VARCHAR)) AS h
+                   md5('orders#' || CAST(o_orderkey AS STRING)) AS h
             FROM orders
         )
         WHERE o_orderkey <= 1000
@@ -608,35 +596,7 @@ def scalar_deterministic_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     MD5 surrogate key, utils/data_manager.py:54-68, taken to a
     cross-system format). Pure string expressions — codegen, no
     shuffle, engine-exact."""
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") <= 1000)
-        .withColumn(
-            "h",
-            F.md5(
-                F.concat(F.lit("orders#"), F.col("o_orderkey").cast("string"))
-            ),
-        )
-    )
-    h = F.col("h")
-    nib = F.expr("instr('0123456789abcdef', substring(h, 17, 1))") - 1
-    variant = (
-        F.when(nib < 8, F.concat(F.lit("8"), F.substring(h, 18, 3)))
-        .when(nib < 12, F.concat(F.lit("9"), F.substring(h, 18, 3)))
-        .when(nib < 14, F.concat(F.lit("a"), F.substring(h, 18, 3)))
-        .otherwise(F.concat(F.lit("b"), F.substring(h, 18, 3)))
-    )
-    return o.select(
-        "o_orderkey",
-        F.concat_ws(
-            "-",
-            F.substring(h, 1, 8),
-            F.substring(h, 9, 4),
-            F.concat(F.lit("5"), F.substring(h, 14, 3)),
-            variant,
-            F.substring(h, 21, 12),
-        ).alias("order_uuid"),
-    )
+    return run_sql(spark, sf_dir, "scalar_deterministic_uuid")
 
 
 @register(
@@ -645,9 +605,9 @@ def scalar_deterministic_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH pans AS (
             SELECT c_custkey,
-                   '4' || lpad(CAST(c_custkey * 37 % 100000000 AS VARCHAR),
+                   '4' || lpad(CAST(c_custkey * 37 % 100000000 AS STRING),
                                8, '0')
-                       || lpad(CAST(c_custkey * 101 % 1000000 AS VARCHAR),
+                       || lpad(CAST(c_custkey * 101 % 1000000 AS STRING),
                                6, '0') AS pan15
             FROM customer
         ),
@@ -655,7 +615,7 @@ def scalar_deterministic_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT c_custkey, pan15, i,
                    CAST(substr(pan15, 16 - i, 1) AS BIGINT) AS d
             FROM pans
-            CROSS JOIN (SELECT unnest(generate_series(1, 15)) AS i) s
+            CROSS JOIN (SELECT i FROM range(1, 15 + 1) AS t(i)) s
         ),
         summed AS (
             SELECT c_custkey, pan15,
@@ -665,7 +625,7 @@ def scalar_deterministic_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM digits GROUP BY c_custkey, pan15
         )
         SELECT c_custkey,
-               pan15 || CAST((10 - luhn_sum % 10) % 10 AS VARCHAR) AS pan,
+               pan15 || CAST((10 - luhn_sum % 10) % 10 AS STRING) AS pan,
                CAST((10 - luhn_sum % 10) % 10 AS BIGINT) AS check_digit,
                ((luhn_sum + (10 - luhn_sum % 10) % 10) % 10 = 0)
                    AS luhn_valid
@@ -685,42 +645,7 @@ def scalar_luhn_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ingest-validation primitive every payments pipeline runs on
     card-number columns; the explode-against-spine shape is the
     scale-safe per-character loop."""
-    c = load_table(spark, sf_dir, "customer")
-    pans = c.select(
-        "c_custkey",
-        F.concat(
-            F.lit("4"),
-            F.lpad((F.col("c_custkey") * 37 % 100000000).cast("string"), 8, "0"),
-            F.lpad((F.col("c_custkey") * 101 % 1000000).cast("string"), 6, "0"),
-        ).alias("pan15"),
-    )
-    spine = spark.range(1, 16).select(F.col("id").cast("int").alias("i"))
-    digits = pans.crossJoin(F.broadcast(spine)).select(
-        "c_custkey",
-        "pan15",
-        "i",
-        F.substring(F.col("pan15"), F.lit(16) - F.col("i"), 1)
-        .cast("bigint")
-        .alias("d"),
-    )
-    term = F.when(
-        F.col("i") % 2 == 1,
-        F.when(F.col("d") * 2 > 9, F.col("d") * 2 - 9).otherwise(F.col("d") * 2),
-    ).otherwise(F.col("d"))
-    summed = digits.groupBy("c_custkey", "pan15").agg(
-        F.sum(term).cast("bigint").alias("luhn_sum")
-    )
-    check = (10 - F.col("luhn_sum") % 10) % 10
-    return (
-        summed.select(
-            "c_custkey",
-            F.concat(F.col("pan15"), check.cast("string")).alias("pan"),
-            check.cast("bigint").alias("check_digit"),
-            ((F.col("luhn_sum") + check) % 10 == 0).alias("luhn_valid"),
-        )
-        .orderBy("c_custkey")
-        .limit(500)
-    )
+    return run_sql(spark, sf_dir, "scalar_luhn_validate")
 
 
 # ---------------------------------------------------------------------------

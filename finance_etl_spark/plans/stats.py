@@ -2537,7 +2537,7 @@ _RESID_CTES = f"""
         daily AS ({DAILY_SCALED_SQL}),
         base AS (
             SELECT event_type,
-                   CAST(date_diff('day', DATE '2024-01-01', day) AS BIGINT)
+                   CAST(CAST(day AS DATE) - DATE '2024-01-01' AS BIGINT)
                        AS t,
                    v
             FROM daily
@@ -2546,9 +2546,9 @@ _RESID_CTES = f"""
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(t) AS BIGINT) AS st,
                    CAST(SUM(v) AS BIGINT) AS sv,
-                   CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * t) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * t) AS STRING)
                         AS DOUBLE) AS stt,
-                   CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * v) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * v) AS STRING)
                         AS DOUBLE) AS stv
             FROM base GROUP BY event_type
         ),
@@ -2575,51 +2575,6 @@ _RESID_CTES = f"""
 """
 
 
-def _ols_daily_resid(spark: SparkSession, sf_dir: str):
-    """(resid, coef): per-(event_type, t) OLS residuals of the daily
-    exact-integer series plus the per-type coefficient relation.
-    Corpus work is ONE map-side-combining (type, day) agg; everything
-    downstream runs on O(types x days) rows, coefficients broadcast."""
-    daily = daily_scaled(spark, sf_dir)
-    base = daily.select(
-        "event_type",
-        F.datediff(F.col("day"), F.lit("2024-01-01").cast("date"))
-        .cast("bigint")
-        .alias("t"),
-        "v",
-    )
-    suff = base.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        F.sum("v").cast("bigint").alias("sv"),
-        as_d(F.sum(F.col("t").cast("decimal(38,0)") * F.col("t"))).alias("stt"),
-        as_d(F.sum(F.col("t").cast("decimal(38,0)") * F.col("v"))).alias("stv"),
-    )
-    n_d = F.col("n").cast("double")
-    st_d = F.col("st").cast("double")
-    sv_d = F.col("sv").cast("double")
-    denom = n_d * F.col("stt") - st_d * st_d
-    coef = suff.withColumn(
-        "beta",
-        (n_d * F.col("stv") - st_d * sv_d)
-        / F.when(denom != 0, denom),  # NULLIF twin: single-day series
-    ).withColumn(
-        "alpha", (sv_d - F.col("beta") * st_d) / n_d
-    )
-    resid = base.join(
-        F.broadcast(coef.select("event_type", "alpha", "beta")), "event_type"
-    ).select(
-        "event_type",
-        "t",
-        (
-            F.col("v").cast("double")
-            - F.col("alpha")
-            - F.col("beta") * F.col("t").cast("double")
-        ).alias("e"),
-    )
-    return resid, coef
-
-
 @register(
     "stat_durbin_watson",
     tags=("stats", "ts", "window"),
@@ -2637,11 +2592,11 @@ def _ols_daily_resid(spark: SparkSession, sf_dir: str):
         sums AS (
             SELECT event_type,
                    CAST(CAST(SUM(CAST(ef AS DECIMAL(19,0)) * ef)
-                        AS VARCHAR) AS DOUBLE) AS se2,
+                        AS STRING) AS DOUBLE) AS se2,
                    CAST(CAST(SUM(CASE WHEN ep IS NOT NULL
                         THEN CAST(ef - ep AS DECIMAL(19,0)) * (ef - ep)
                         ELSE CAST(0 AS DECIMAL(19,0)) END)
-                        AS VARCHAR) AS DOUBLE) AS sdiff
+                        AS STRING) AS DOUBLE) AS sdiff
             FROM lagd GROUP BY event_type
         )
         SELECT s.event_type, c.n, c.beta,
@@ -2665,37 +2620,7 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches a window. Class-5 edges: a flat series (all residuals 0)
     NULLs DW via the same CASE; a single-day series NULLs beta via
     NULLIF upstream."""
-    resid, coef = _ols_daily_resid(spark, sf_dir)
-    qr = resid.select(
-        "event_type", "t", F.floor(F.col("e")).cast("bigint").alias("ef")
-    )
-    w = Window.partitionBy("event_type").orderBy("t")
-    lagd = qr.withColumn("ep", F.lag("ef").over(w))
-    dec19 = "decimal(19,0)"
-    sums = lagd.groupBy("event_type").agg(
-        as_d(F.sum(F.col("ef").cast(dec19) * F.col("ef"))).alias("se2"),
-        as_d(
-            F.sum(
-                F.when(
-                    F.col("ep").isNotNull(),
-                    (F.col("ef") - F.col("ep")).cast(dec19)
-                    * (F.col("ef") - F.col("ep")),
-                ).otherwise(F.lit(0).cast(dec19))
-            )
-        ).alias("sdiff"),
-    )
-    return (
-        sums.join(
-            F.broadcast(coef.select("event_type", "n", "beta")), "event_type"
-        )
-        .select(
-            "event_type",
-            "n",
-            "beta",
-            F.when(F.col("se2") > 0, F.col("sdiff") / F.col("se2")).alias("dw"),
-        )
-        .orderBy("event_type")
-    )
+    return run_sql(spark, sf_dir, "stat_durbin_watson")
 
 
 @register(
@@ -2716,13 +2641,13 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         s AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(t) AS BIGINT) AS st,
-                   CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * t) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * t) AS STRING)
                         AS DOUBLE) AS stt,
-                   CAST(CAST(SUM(uu) AS VARCHAR) AS DOUBLE) AS su,
-                   CAST(CAST(SUM(CAST(t AS DECIMAL(19,0)) * uu) AS VARCHAR)
+                   CAST(CAST(SUM(uu) AS STRING) AS DOUBLE) AS su,
+                   CAST(CAST(SUM(CAST(t AS DECIMAL(19,0)) * uu) AS STRING)
                         AS DOUBLE) AS stu,
                    CAST(CAST(SUM(CAST(uu AS DECIMAL(19,0))
-                                 * CAST(uu AS DECIMAL(19,0))) AS VARCHAR)
+                                 * CAST(uu AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS suu
             FROM u GROUP BY event_type
         )
@@ -2763,42 +2688,7 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-variance or zero u-variance (a perfectly homoscedastic
     quantized series) NULLs both outputs via the same CASE on both
     engines."""
-    resid, _ = _ols_daily_resid(spark, sf_dir)
-    q = resid.select(
-        "event_type",
-        "t",
-        F.floor(F.col("e") * F.lit(0.001)).cast("bigint").alias("e3"),
-    )
-    u = q.select(
-        "event_type",
-        "t",
-        (F.col("e3").cast("decimal(19,0)") * F.col("e3")).alias("uu"),
-    )
-    s = u.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        as_d(F.sum(F.col("t").cast("decimal(38,0)") * F.col("t"))).alias("stt"),
-        as_d(F.sum("uu")).alias("su"),
-        as_d(F.sum(F.col("t").cast("decimal(19,0)") * F.col("uu"))).alias("stu"),
-        as_d(
-            F.sum(
-                F.col("uu").cast("decimal(19,0)")
-                * F.col("uu").cast("decimal(19,0)")
-            )
-        ).alias("suu"),
-    )
-    n_d = F.col("n").cast("double")
-    st_d = F.col("st").cast("double")
-    vt = n_d * F.col("stt") - st_d * st_d
-    vu = n_d * F.col("suu") - F.col("su") * F.col("su")
-    num = n_d * F.col("stu") - st_d * F.col("su")
-    ok = (vt > 0) & (vu > 0)
-    return s.select(
-        "event_type",
-        "n",
-        F.when(ok, num * num / (vt * vu)).alias("r2_aux"),
-        F.when(ok, n_d * num * num / (vt * vu)).alias("lm_stat"),
-    ).orderBy("event_type")
+    return run_sql(spark, sf_dir, "stat_breusch_pagan")
 
 
 @register(
@@ -4406,12 +4296,12 @@ def stat_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         kept AS (
             SELECT segment, i, nn,
-                   CASE WHEN i <= nn // 2
+                   CASE WHEN i <= CAST(FLOOR(nn / 2) AS BIGINT)
                         THEN 2 * i - (i % 2)
                         ELSE 2 * (nn + 1 - i) - ((nn - i) % 2)
                    END AS st
             FROM pos
-            WHERE NOT (nn % 2 = 1 AND i = (nn + 1) // 2)
+            WHERE NOT (nn % 2 = 1 AND i = CAST(FLOOR((nn + 1) / 2) AS BIGINT))
         ),
         s AS (
             SELECT CAST(SUM(CASE WHEN segment = 'BUILDING' THEN 1
@@ -4451,56 +4341,7 @@ def stat_siegel_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every SF by fixture (both segments ship in region 0 data);
     the z denominator is guarded anyway, identically on both
     engines."""
-    daily = seg_daily(spark, sf_dir)
-    pooled = daily.filter(
-        F.col("segment").isin("BUILDING", "MACHINERY")
-    ).select("segment", "d", (F.col("x") * 100).cast("bigint").alias("v"))
-    w_i = Window.orderBy("v", "d", "segment")
-    w_all = Window.partitionBy()
-    pos = pooled.select(
-        "segment",
-        F.row_number().over(w_i).alias("i"),
-        F.count(F.lit(1)).over(w_all).alias("nn"),
-    )
-    j = F.col("nn") + 1 - F.col("i")
-    kept = pos.filter(
-        ~(
-            (F.col("nn") % 2 == 1)
-            & (F.col("i") == (F.col("nn") + 1) / 2)
-        )
-    ).select(
-        "segment",
-        F.when(
-            F.col("i") <= F.expr("CAST(nn DIV 2 AS BIGINT)"),
-            2 * F.col("i") - (F.col("i") % 2),
-        )
-        .otherwise(2 * j - ((F.col("nn") - F.col("i")) % 2))
-        .alias("st"),
-    )
-    s = kept.agg(
-        F.sum(F.when(F.col("segment") == "BUILDING", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-        F.sum(F.when(F.col("segment") == "BUILDING", 0).otherwise(1))
-        .cast("bigint")
-        .alias("n0"),
-        F.sum(F.when(F.col("segment") == "BUILDING", F.col("st")).otherwise(0))
-        .cast("bigint")
-        .alias("w1"),
-    )
-    n1_d = F.col("n1").cast("double")
-    n0_d = F.col("n0").cast("double")
-    return s.select(
-        F.col("n1").alias("n_building"),
-        F.col("n0").alias("n_machinery"),
-        F.col("w1").alias("w_rank_sum"),
-        F.when(
-            (F.col("n1") > 0) & (F.col("n0") > 0),
-            (2 * F.col("w1") - F.col("n1") * (F.col("n1") + F.col("n0") + 1))
-            .cast("double")
-            / F.sqrt(n1_d * n0_d * (n1_d + n0_d + 1) / 3),
-        ).alias("z_scale"),
-    )
+    return run_sql(spark, sf_dir, "stat_siegel_tukey")
 
 
 # ---------------------------------------------------------------------------
@@ -4909,31 +4750,31 @@ def stat_cuzick_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM orders
         ),
         split AS (
-            SELECT v, v // 10000 AS a, v % 10000 AS b FROM base
+            SELECT v, CAST(FLOOR(v / 10000) AS BIGINT) AS a, v % 10000 AS b FROM base
         ),
         s AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(CAST(v AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS s1,
-                   CAST(CAST(SUM(CAST(v AS DECIMAL(15,0)) * v) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(15,0)) * v) AS STRING)
                         AS DOUBLE) AS s2,
                    CAST(CAST(SUM(CAST(CAST(v AS DECIMAL(15,0)) * v
-                                      AS DECIMAL(23,0)) * v) AS VARCHAR)
+                                      AS DECIMAL(23,0)) * v) AS STRING)
                         AS DOUBLE) AS s3,
                    CAST(1e16 AS DOUBLE)
                      * CAST(CAST(SUM(CAST(a*a*a*a AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(4e12 AS DOUBLE)
                      * CAST(CAST(SUM(CAST(a*a*a*b AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(6e8 AS DOUBLE)
                      * CAST(CAST(SUM(CAST((a*b)*(a*b) AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(4e4 AS DOUBLE)
                      * CAST(CAST(SUM(CAST(a*b*b*b AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(CAST(SUM(CAST((b*b)*(b*b) AS DECIMAL(28,0)))
-                               AS VARCHAR) AS DOUBLE) AS s4
+                               AS STRING) AS DOUBLE) AS s4
             FROM split
         ),
         m AS (
@@ -4988,71 +4829,7 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     is NOT cross-engine-stable; sqrt and * are IEEE-exact). Degenerate
     zero variance NULLs all three outputs identically. One scan, one
     5-number agg; nothing downstream of the agg touches the corpus."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("v")
-    )
-    base = base.select(
-        "v",
-        F.expr("v div 10000").alias("a"),
-        (F.col("v") % 10000).alias("b"),
-    )
-    v15 = F.col("v").cast("decimal(15,0)")
-    a, b = F.col("a"), F.col("b")
-    d28 = "decimal(28,0)"
-    s = base.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum(F.col("v").cast("decimal(19,0)"))).alias("s1"),
-        as_d(F.sum(v15 * F.col("v"))).alias("s2"),
-        as_d(
-            F.sum((v15 * F.col("v")).cast("decimal(23,0)") * F.col("v"))
-        ).alias("s3"),
-        as_d(F.sum((a * a * a * a).cast(d28))).alias("sa4"),
-        as_d(F.sum((a * a * a * b).cast(d28))).alias("sa3b"),
-        as_d(F.sum(((a * b) * (a * b)).cast(d28))).alias("sa2b2"),
-        as_d(F.sum((a * b * b * b).cast(d28))).alias("sab3"),
-        as_d(F.sum(((b * b) * (b * b)).cast(d28))).alias("sb4"),
-    )
-    s = s.select(
-        "n",
-        "s1",
-        "s2",
-        "s3",
-        (
-            F.expr("CAST(1e16 AS DOUBLE)") * F.col("sa4")
-            + F.expr("CAST(4e12 AS DOUBLE)") * F.col("sa3b")
-            + F.expr("CAST(6e8 AS DOUBLE)") * F.col("sa2b2")
-            + F.expr("CAST(4e4 AS DOUBLE)") * F.col("sab3")
-            + F.col("sb4")
-        ).alias("s4"),
-    )
-    n_d = F.col("n").cast("double")
-    mu = F.col("s1") / n_d
-    m2 = F.col("s2") / n_d - mu * mu
-    m3 = (
-        F.col("s3") / n_d
-        - 3 * mu * (F.col("s2") / n_d)
-        + 2 * mu * mu * mu
-    )
-    m4 = (
-        F.col("s4") / n_d
-        - 4 * mu * (F.col("s3") / n_d)
-        + 6 * mu * mu * (F.col("s2") / n_d)
-        - 3 * mu * mu * mu * mu
-    )
-    sk = m3 / (F.sqrt(m2) * F.sqrt(m2) * F.sqrt(m2))
-    ku = m4 / (m2 * m2)
-    return s.select(
-        "n",
-        F.when(m2 > 0, sk).alias("skewness"),
-        F.when(m2 > 0, ku).alias("kurtosis"),
-        F.when(
-            m2 > 0,
-            n_d * (sk * sk / 6 + (ku - 3) * (ku - 3) / 24),
-        ).alias("jb_stat"),
-    )
+    return run_sql(spark, sf_dir, "stat_jarque_bera")
 
 
 # ---------------------------------------------------------------------------
@@ -5725,54 +5502,28 @@ _CENTS_CUM_SQL = """
 """
 
 
-def _cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(v, cnt, c, n): distinct order-total cents with cumulative and
-    total counts — the bucket+carry rank relation shared by the exact
-    order-statistic operators. The Spark cumulative runs over the
-    DISTINCT-VALUE relation (value-domain-bounded), not corpus rows;
-    the oracle's plain window is equivalent on the same relation."""
-    o = load_table(spark, sf_dir, "orders")
-    cents = o.select(
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("v")
-    )
-    vals = cents.groupBy("v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    wv = Window.orderBy("v")  # distinct-value relation: domain-bounded
-    return vals.select(
-        "v",
-        "cnt",
-        F.sum("cnt").over(wv).cast("bigint").alias("c"),
-        F.sum("cnt").over(Window.partitionBy(F.lit(1)))
-        .cast("bigint")
-        .alias("n"),
-    )
-
-
 @register(
     "stat_trimmed_mean",
     tags=("stats", "window", "agg"),
     oracle=f"""
         WITH {_CENTS_CUM_SQL},
         parts AS (
-            SELECT n, n // 20 AS k,
+            SELECT n, CAST(FLOOR(n / 20) AS BIGINT) AS k,
                    CAST(SUM(CAST(v AS DECIMAL(19,0)) * cnt) AS DECIMAL(38,0))
                        AS total,
                    CAST(SUM(CAST(v AS DECIMAL(19,0))
                             * LEAST(cnt, GREATEST(
-                                CAST(0 AS BIGINT), n // 20 - (c - cnt))))
+                                CAST(0 AS BIGINT), CAST(FLOOR(n / 20) AS BIGINT) - (c - cnt))))
                         AS DECIMAL(38,0)) AS bot,
                    CAST(SUM(CAST(v AS DECIMAL(19,0))
                             * LEAST(cnt, GREATEST(
-                                CAST(0 AS BIGINT), c - (n - n // 20))))
+                                CAST(0 AS BIGINT), c - (n - CAST(FLOOR(n / 20) AS BIGINT)))))
                         AS DECIMAL(38,0)) AS top
             FROM cum GROUP BY n
         )
         SELECT n, CAST(k AS BIGINT) AS k_each_side,
                CASE WHEN n - 2 * k > 0 THEN
-                 CAST(CAST(total - bot - top AS VARCHAR) AS DOUBLE)
+                 CAST(CAST(total - bot - top AS STRING) AS DOUBLE)
                    / (CAST(n - 2 * k AS DOUBLE) * CAST(100 AS DOUBLE))
                END AS trimmed_mean
         FROM parts
@@ -5790,36 +5541,7 @@ def stat_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     division at the edge. Degenerate n <= 2k NULLs identically. Corpus
     work: one value-histogram agg; the cumulative rides the
     domain-bounded distinct-value relation."""
-    cum = _cents_cum(spark, sf_dir)
-    k = F.expr("n div 20")
-    vdec = F.col("v").cast("decimal(19,0)")
-    bot_take = F.least(
-        F.col("cnt"),
-        F.greatest(F.lit(0).cast("bigint"), k - (F.col("c") - F.col("cnt"))),
-    )
-    top_take = F.least(
-        F.col("cnt"),
-        F.greatest(
-            F.lit(0).cast("bigint"), F.col("c") - (F.col("n") - k)
-        ),
-    )
-    parts = cum.groupBy("n").agg(
-        as_d(
-            F.sum(vdec * F.col("cnt")).cast("decimal(38,0)")
-            - F.sum(vdec * bot_take).cast("decimal(38,0)")
-            - F.sum(vdec * top_take).cast("decimal(38,0)")
-        ).alias("mid"),
-    )
-    kk = F.expr("n div 20")
-    return parts.select(
-        "n",
-        kk.cast("bigint").alias("k_each_side"),
-        F.when(
-            F.col("n") - 2 * kk > 0,
-            F.col("mid")
-            / ((F.col("n") - 2 * kk).cast("double") * F.lit(100.0)),
-        ).alias("trimmed_mean"),
-    )
+    return run_sql(spark, sf_dir, "stat_trimmed_mean")
 
 
 @register(
@@ -5829,12 +5551,12 @@ def stat_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH {_CENTS_CUM_SQL},
         qs AS (
             SELECT
-                MAX(CASE WHEN c - cnt < (n + 3) // 4
-                          AND c >= (n + 3) // 4 THEN v END) AS q1,
-                MAX(CASE WHEN c - cnt < (n + 1) // 2
-                          AND c >= (n + 1) // 2 THEN v END) AS q2,
-                MAX(CASE WHEN c - cnt < (3 * n + 1) // 4
-                          AND c >= (3 * n + 1) // 4 THEN v END) AS q3,
+                MAX(CASE WHEN c - cnt < CAST(FLOOR((n + 3) / 4) AS BIGINT)
+                          AND c >= CAST(FLOOR((n + 3) / 4) AS BIGINT) THEN v END) AS q1,
+                MAX(CASE WHEN c - cnt < CAST(FLOOR((n + 1) / 2) AS BIGINT)
+                          AND c >= CAST(FLOOR((n + 1) / 2) AS BIGINT) THEN v END) AS q2,
+                MAX(CASE WHEN c - cnt < CAST(FLOOR((3 * n + 1) / 4) AS BIGINT)
+                          AND c >= CAST(FLOOR((3 * n + 1) / 4) AS BIGINT) THEN v END) AS q3,
                 MAX(n) AS n
             FROM cum
         )
@@ -5857,37 +5579,7 @@ def stat_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the value whose rank range covers the target — one conditional
     max, no global sort). Numerator/denominator are exact integers;
     one guarded division. IQR = 0 NULLs identically."""
-    cum = _cents_cum(spark, sf_dir)
-
-    def order_stat(rank_expr):
-        return F.max(
-            F.when(
-                (F.col("c") - F.col("cnt") < rank_expr)
-                & (F.col("c") >= rank_expr),
-                F.col("v"),
-            )
-        )
-
-    r1 = F.expr("(n + 3) div 4")
-    r2 = F.expr("(n + 1) div 2")
-    r3 = F.expr("(3 * n + 1) div 4")
-    qs = cum.agg(
-        order_stat(r1).alias("q1"),
-        order_stat(r2).alias("q2"),
-        order_stat(r3).alias("q3"),
-        F.max("n").alias("n"),
-    )
-    return qs.select(
-        "n",
-        F.col("q1").cast("bigint").alias("q1_cents"),
-        F.col("q2").cast("bigint").alias("q2_cents"),
-        F.col("q3").cast("bigint").alias("q3_cents"),
-        F.when(
-            F.col("q3") > F.col("q1"),
-            (F.col("q3") + F.col("q1") - 2 * F.col("q2")).cast("double")
-            / (F.col("q3") - F.col("q1")).cast("double"),
-        ).alias("bowley_skew"),
-    )
+    return run_sql(spark, sf_dir, "stat_bowley_skew")
 
 
 # ---------------------------------------------------------------------------
@@ -6260,49 +5952,7 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1*n2 row join; the broadcast is of the bounded cell relation.
     All counts are exact BIGINTs; delta is the single presentation
     division."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag").isin("R", "N"))
-        .select(
-            F.col("l_returnflag").alias("g"),
-            F.col("l_quantity").cast("decimal(12,2)").alias("q"),
-        )
-    )
-    cells = li.groupBy("g", "q").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    a = cells.filter(F.col("g") == "R").select(
-        F.col("q").alias("qa"), F.col("n").alias("na")
-    )
-    b = cells.filter(F.col("g") == "N").select(
-        F.col("q").alias("qb"), F.col("n").alias("nb")
-    )
-    pair = a.crossJoin(F.broadcast(b)).agg(
-        F.sum(F.when(F.col("qa") > F.col("qb"), F.col("na") * F.col("nb")).otherwise(0))
-        .cast("bigint")
-        .alias("n_gt"),
-        F.sum(F.when(F.col("qa") < F.col("qb"), F.col("na") * F.col("nb")).otherwise(0))
-        .cast("bigint")
-        .alias("n_lt"),
-    )
-    n1 = cells.filter(F.col("g") == "R").agg(
-        F.sum("n").cast("bigint").alias("n1")
-    )
-    n2 = cells.filter(F.col("g") == "N").agg(
-        F.sum("n").cast("bigint").alias("n2")
-    )
-    return (
-        pair.crossJoin(F.broadcast(n1))
-        .crossJoin(F.broadcast(n2))
-        .select(
-            "n1",
-            "n2",
-            "n_gt",
-            "n_lt",
-            (
-                (F.col("n_gt") - F.col("n_lt")).cast("double")
-                / (F.col("n1").cast("double") * F.col("n2").cast("double"))
-            ).alias("cliffs_delta"),
-        )
-    )
+    return run_sql(spark, sf_dir, "stat_cliffs_delta")
 
 
 # ---------------------------------------------------------------------------

@@ -3362,13 +3362,13 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "dedup", "join"),
     oracle="""
         WITH pairs AS (
-            SELECT a1.p_partkey // 16 AS bkt,
+            SELECT CAST(FLOOR(a1.p_partkey / 16) AS BIGINT) AS bkt,
                    levenshtein(a1.p_name, a2.p_name) AS lev
             FROM part a1
-            JOIN part a2 ON a1.p_partkey // 16 = a2.p_partkey // 16
+            JOIN part a2 ON CAST(FLOOR(a1.p_partkey / 16) AS BIGINT) = CAST(FLOOR(a2.p_partkey / 16) AS BIGINT)
                         AND a1.p_partkey < a2.p_partkey
         )
-        SELECT CAST(lev // 5 AS INT) AS lev_bucket,
+        SELECT CAST(CAST(FLOOR(lev / 5) AS BIGINT) AS INT) AS lev_bucket,
                CAST(COUNT(*) AS BIGINT) AS n_pairs,
                CAST(MIN(lev) AS BIGINT) AS min_lev,
                CAST(MAX(lev) AS BIGINT) AS max_lev,
@@ -3393,30 +3393,7 @@ def text_levenshtein_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines implement identically (pinned against a pure-Python
     DP in the reference test); the histogram is exact integer
     aggregation."""
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
-    a1 = p.select(
-        F.expr("p_partkey div 16").alias("bkt"),
-        F.col("p_partkey").alias("k1"),
-        F.col("p_name").alias("name1"),
-    )
-    a2 = p.select(
-        F.expr("p_partkey div 16").alias("bkt"),
-        F.col("p_partkey").alias("k2"),
-        F.col("p_name").alias("name2"),
-    )
-    pairs = a1.join(a2, "bkt").filter(F.col("k1") < F.col("k2")).select(
-        F.levenshtein("name1", "name2").alias("lev")
-    )
-    return (
-        pairs.groupBy(F.expr("lev div 5").cast("int").alias("lev_bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.min("lev").cast("bigint").alias("min_lev"),
-            F.max("lev").cast("bigint").alias("max_lev"),
-            F.sum(F.col("lev").cast("bigint")).cast("bigint").alias("sum_lev"),
-        )
-        .orderBy("lev_bucket")
-    )
+    return run_sql(spark, sf_dir, "text_levenshtein_profile")
 
 
 # ---------------------------------------------------------------------------

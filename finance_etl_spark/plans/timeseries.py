@@ -487,7 +487,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM events
         )
         SELECT c.cohort_day,
-               CAST(date_diff('day', c.cohort_day, a.activity_day) AS INT) AS days_since,
+               CAST(CAST(CAST(a.activity_day AS DATE) - CAST(c.cohort_day AS DATE) AS BIGINT) AS INT) AS days_since,
                COUNT(*) AS n_active_users
         FROM cohort c JOIN activity a USING (user_id)
         GROUP BY c.cohort_day, days_since
@@ -500,18 +500,7 @@ def ts_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (user, day) grain FIRST, so the cohort⋈activity join shuffles
     one row per user-day, not raw events; both sides hash-partition on
     user_id (co-partitioned, AQE-coalesced)."""
-    ev = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", "ts").cast("date")
-    cohort = ev.groupBy("user_id").agg(F.min(day).alias("cohort_day"))
-    activity = ev.select("user_id", day.alias("activity_day")).distinct()
-    return (
-        cohort.join(activity, "user_id")
-        .groupBy(
-            "cohort_day",
-            F.datediff("activity_day", "cohort_day").cast("int").alias("days_since"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_active_users"))
-    )
+    return run_sql(spark, sf_dir, "ts_cohort_retention")
 
 
 @register(
@@ -1934,11 +1923,11 @@ def ts_sequence_mining_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) WHERE rn = CAST(ceil(0.5 * n) AS BIGINT)
         )
         SELECT v.event_type, v.d,
-               CAST(CAST(v.y AS VARCHAR) AS DOUBLE) AS daily_value,
-               CAST(CAST(v.med AS VARCHAR) AS DOUBLE) AS median_value,
-               CAST(CAST(m.mad AS VARCHAR) AS DOUBLE) AS mad,
-               CAST(CAST(v.absdev AS VARCHAR) AS DOUBLE)
-                 / CAST(CAST(m.mad AS VARCHAR) AS DOUBLE) AS robust_z
+               CAST(CAST(v.y AS STRING) AS DOUBLE) AS daily_value,
+               CAST(CAST(v.med AS STRING) AS DOUBLE) AS median_value,
+               CAST(CAST(m.mad AS STRING) AS DOUBLE) AS mad,
+               CAST(CAST(v.absdev AS STRING) AS DOUBLE)
+                 / CAST(CAST(m.mad AS STRING) AS DOUBLE) AS robust_z
         FROM dev v JOIN mad m ON m.event_type = v.event_type
         WHERE m.mad > 0 AND v.absdev > 3.5 * m.mad
     """,
@@ -1953,58 +1942,7 @@ def ts_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate all stay DECIMAL; doubles appear only in the presented
     columns. Per-series windows are calendar-bounded; MAD=0 series
     (constant) are excluded to keep the score defined."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast(DEC)).alias("y"))
-
-    def order_stat(df: DataFrame, col: str, out: str) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(col, "d")
-        wn = Window.partitionBy("event_type")
-        return (
-            df.select(
-                "event_type",
-                col,
-                F.row_number().over(w).alias("rn"),
-                F.count(F.lit(1)).over(wn).alias("n"),
-            )
-            .filter(
-                F.col("rn") == F.ceil(F.lit(0.5) * F.col("n")).cast("long")
-            )
-            .select("event_type", F.col(col).alias(out))
-        )
-
-    med = order_stat(daily, "y", "med")
-    dev = daily.join(F.broadcast(med), "event_type").select(
-        "event_type",
-        "d",
-        "y",
-        "med",
-        F.abs(F.col("y") - F.col("med")).alias("absdev"),
-    )
-    mad = order_stat(dev, "absdev", "mad")
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .filter(
-            (F.col("mad") > 0)
-            # decimal literal: DuckDB parses 3.5 as DECIMAL(2,1), so the
-            # gate must be an exact decimal comparison on BOTH engines
-            # (a double 3.5 here would round the product differently)
-            & (
-                F.col("absdev")
-                > F.expr("CAST(3.5 AS DECIMAL(2,1))") * F.col("mad")
-            )
-        )
-        .select(
-            "event_type",
-            "d",
-            F.col("y").cast("double").alias("daily_value"),
-            F.col("med").cast("double").alias("median_value"),
-            F.col("mad").cast("double").alias("mad"),
-            (F.col("absdev").cast("double") / F.col("mad").cast("double"))
-            .alias("robust_z"),
-        )
-    )
+    return run_sql(spark, sf_dir, "ts_anomaly_mad_robust")
 
 
 @register(
@@ -2686,7 +2624,7 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs AS (
             SELECT a.event_type,
                    CAST(b.v - a.v AS DOUBLE)
-                     / CAST(date_diff('day', a.day, b.day) AS DOUBLE)
+                     / CAST(CAST(CAST(b.day AS DATE) - CAST(a.day AS DATE) AS BIGINT) AS DOUBLE)
                        AS slope
             FROM daily a JOIN daily b
               ON b.event_type = a.event_type AND b.day > a.day
@@ -2699,7 +2637,7 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM pairs
         )
         SELECT event_type, CAST(MIN(np) AS BIGINT) AS n_pairs,
-               MIN(CASE WHEN rk = (np + 1) // 2 THEN slope END) / 1e6
+               MIN(CASE WHEN rk = CAST(FLOOR((np + 1) / 2) AS BIGINT) THEN slope END) / 1e6
                    AS theil_sen_slope
         FROM ranked
         GROUP BY event_type
@@ -2716,50 +2654,9 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTITIONED BY SERIES (never global). The O(days²) pair join is
     the documented cost bound — days-per-series, not the corpus,
     squares; the corpus itself collapses to daily rows in one
-    map-side scan. DuckDB's // and Spark's DIV pin the rank floor."""
-    daily = daily_scaled(spark, sf_dir)
-    a = daily.select(
-        "event_type", F.col("day").alias("d1"), F.col("v").alias("v1")
-    )
-    b = daily.select(
-        F.col("event_type").alias("et2"),
-        F.col("day").alias("d2"),
-        F.col("v").alias("v2"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("event_type") == F.col("et2")) & (F.col("d2") > F.col("d1")),
-    ).select(
-        "event_type",
-        (
-            (F.col("v2") - F.col("v1")).cast("double")
-            / F.datediff("d2", "d1").cast("double")
-        ).alias("slope"),
-    )
-    w = Window.partitionBy("event_type").orderBy("slope")
-    wc = Window.partitionBy("event_type")
-    ranked = pairs.select(
-        "event_type",
-        "slope",
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(wc).alias("np"),
-    )
-    return (
-        ranked.groupBy("event_type")
-        .agg(
-            F.min("np").cast("bigint").alias("n_pairs"),
-            (
-                F.min(
-                    F.when(
-                        F.col("rk") == F.expr("(np + 1) DIV 2"),
-                        F.col("slope"),
-                    )
-                )
-                / F.lit(1e6)
-            ).alias("theil_sen_slope"),
-        )
-        .orderBy("event_type")
-    )
+    map-side scan. CAST(FLOOR(.. / 2) AS BIGINT) on a positive count
+    pins the rank floor on both engines."""
+    return run_sql(spark, sf_dir, "ts_theil_sen")
 
 
 @register(
@@ -2940,18 +2837,18 @@ def ts_granger_causality_1lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         full_s AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) AS VARCHAR) AS DOUBLE) AS sxx
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) AS STRING) AS DOUBLE) AS sxx
             FROM daily GROUP BY event_type
         ),
         pairs AS (
             SELECT a.event_type, ks.k,
                    CAST(COUNT(*) AS BIGINT) AS c,
-                   CAST(CAST(SUM(a.x) AS VARCHAR) AS DOUBLE) AS spx,
-                   CAST(CAST(SUM(b.x) AS VARCHAR) AS DOUBLE) AS spy,
-                   CAST(CAST(SUM(CAST(a.x AS DECIMAL(19,6)) * b.x) AS VARCHAR) AS DOUBLE) AS spxy
+                   CAST(CAST(SUM(a.x) AS STRING) AS DOUBLE) AS spx,
+                   CAST(CAST(SUM(b.x) AS STRING) AS DOUBLE) AS spy,
+                   CAST(CAST(SUM(CAST(a.x AS DECIMAL(19,6)) * b.x) AS STRING) AS DOUBLE) AS spxy
             FROM daily a
-            CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks
+            CROSS JOIN (SELECT k FROM (VALUES (1), (2), (3)) AS t(k)) ks
             JOIN daily b ON b.event_type = a.event_type
                         AND b.rn = a.rn - ks.k
             GROUP BY a.event_type, ks.k
@@ -2997,75 +2894,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out is a 3-row broadcast; corpus-scale work is one map-side-
     combining daily agg. The three r_k^2/(n-k) terms fold in the fixed
     k order, so the Q sum is order-free by construction."""
-    daily = event_daily_rn(spark, sf_dir).drop("d")
-    full_s = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        as_d(F.sum("x")).alias("sx"),
-        as_d(F.sum(F.col("x") * F.col("x"))).alias("sxx"),
-    )
-    ks = spark.range(1, 4).select(F.col("id").cast("int").alias("k"))
-    b = daily.select(
-        F.col("event_type").alias("event_type_b"),
-        F.col("rn").alias("rn_b"),
-        F.col("x").alias("xl"),
-    )
-    pairs = (
-        daily.join(F.broadcast(ks))
-        .join(
-            b,
-            (F.col("event_type") == F.col("event_type_b"))
-            & (F.col("rn_b") == F.col("rn") - F.col("k")),
-        )
-        .groupBy("event_type", "k")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            as_d(F.sum("x")).alias("spx"),
-            as_d(F.sum("xl")).alias("spy"),
-            as_d(F.sum(F.col("x") * F.col("xl"))).alias("spxy"),
-        )
-    )
-    f = full_s.select(
-        F.col("event_type").alias("event_type_f"), "n", "sx", "sxx"
-    )
-    m = F.col("sx") / F.col("n").cast("double")
-    rk = (
-        pairs.join(f, F.col("event_type") == F.col("event_type_f"))
-        .select(
-            "event_type",
-            "k",
-            "n",
-            (
-                (
-                    F.col("spxy")
-                    - m * (F.col("spx") + F.col("spy"))
-                    + F.col("c").cast("double") * m * m
-                )
-                / (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n").cast("double"))
-            ).alias("r"),
-        )
-    )
-    nd_ = F.max("n").cast("double")
-    r_at = lambda i: F.max(F.when(F.col("k") == i, F.col("r")))  # noqa: E731
-    return (
-        rk.groupBy("event_type")
-        .agg(
-            F.max("n").cast("bigint").alias("n"),
-            r_at(1).alias("r1"),
-            r_at(2).alias("r2"),
-            r_at(3).alias("r3"),
-            (
-                nd_
-                * (nd_ + F.lit(2.0))
-                * (
-                    r_at(1) * r_at(1) / (nd_ - F.lit(1.0))
-                    + r_at(2) * r_at(2) / (nd_ - F.lit(2.0))
-                    + r_at(3) * r_at(3) / (nd_ - F.lit(3.0))
-                )
-            ).alias("q_stat"),
-            F.lit(3).cast("bigint").alias("df"),
-        )
-        .orderBy("event_type")
-    )
+    return run_sql(spark, sf_dir, "ts_ljung_box")
 
 
 # ---------------------------------------------------------------------------
@@ -3422,12 +3251,12 @@ def ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         st AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx
             FROM daily GROUP BY event_type
         ),
         obs AS (
             SELECT d.event_type, d.rn,
-                   CASE WHEN CAST(CAST(d.x AS VARCHAR) AS DOUBLE)
+                   CASE WHEN CAST(CAST(d.x AS STRING) AS DOUBLE)
                              > st.sx / CAST(st.n AS DOUBLE)
                         THEN 1 ELSE 0 END AS o,
                    st.n
@@ -3461,8 +3290,8 @@ def ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT event_type, n, CAST(final_state AS INT) AS final_state,
                best_score, path,
-               CAST((length(path) - length(replace(path, '01', ''))) // 2
-                    + (length(path) - length(replace(path, '10', ''))) // 2
+               CAST(CAST(FLOOR((length(path) - length(replace(path, '01', ''))) / 2) AS BIGINT)
+                    + CAST(FLOOR((length(path) - length(replace(path, '10', ''))) / 2) AS BIGINT)
                     AS BIGINT) AS n_switches
         FROM fin ORDER BY event_type
     """,
@@ -4362,7 +4191,7 @@ def ts_cusum_tabular(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH daily AS ({DAILY_SCALED_SQL}),
         base AS (
             SELECT event_type, day,
-                   CAST(date_diff('day', DATE '2024-01-01', day) AS BIGINT)
+                   CAST(CAST(day AS DATE) - DATE '2024-01-01' AS BIGINT)
                        AS t,
                    v
             FROM daily
@@ -4373,9 +4202,9 @@ def ts_cusum_tabular(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(t) OVER w AS BIGINT) AS st,
                    CAST(SUM(v) OVER w AS BIGINT) AS sv,
                    CAST(CAST(SUM(CAST(t AS DECIMAL(19,0)) * t) OVER w
-                        AS VARCHAR) AS DOUBLE) AS stt,
+                        AS STRING) AS DOUBLE) AS stt,
                    CAST(CAST(SUM(CAST(t AS DECIMAL(19,0)) * v) OVER w
-                        AS VARCHAR) AS DOUBLE) AS stv
+                        AS STRING) AS DOUBLE) AS stv
             FROM base
             WINDOW w AS (PARTITION BY event_type ORDER BY t
                          ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
@@ -4407,49 +4236,7 @@ def ts_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the zero-day-variance degenerate NULLs via the same CASE on both
     engines. Windows partition per series over calendar-bounded daily
     rows; the corpus reduces map-side first."""
-    daily = daily_scaled(spark, sf_dir)
-    base = daily.select(
-        "event_type",
-        "day",
-        F.datediff(F.col("day"), F.lit("2024-01-01").cast("date"))
-        .cast("bigint")
-        .alias("t"),
-        "v",
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("t")
-        .rowsBetween(-13, Window.currentRow)
-    )
-    fr = base.select(
-        "event_type",
-        "day",
-        F.count(F.lit(1)).over(w).cast("bigint").alias("n"),
-        F.sum("t").over(w).cast("bigint").alias("st"),
-        F.sum("v").over(w).cast("bigint").alias("sv"),
-        as_d(F.sum(F.col("t").cast("decimal(19,0)") * F.col("t")).over(w)).alias(
-            "stt"
-        ),
-        as_d(F.sum(F.col("t").cast("decimal(19,0)") * F.col("v")).over(w)).alias(
-            "stv"
-        ),
-    )
-    n_d = F.col("n").cast("double")
-    st_d = F.col("st").cast("double")
-    sv_d = F.col("sv").cast("double")
-    denom = n_d * F.col("stt") - st_d * st_d
-    return (
-        fr.filter(F.col("n") == 14)
-        .select(
-            "event_type",
-            "day",
-            F.when(
-                denom > 0,
-                (n_d * F.col("stv") - st_d * sv_d) / denom / F.lit(1e6),
-            ).alias("slope_per_day"),
-        )
-        .orderBy("event_type", "day")
-    )
+    return run_sql(spark, sf_dir, "ts_rolling_slope")
 
 
 @register(
@@ -4536,13 +4323,11 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         outs AS (SELECT src, CAST(SUM(c) AS BIGINT) AS o FROM cnt GROUP BY src),
         trans AS (
             SELECT cnt.src, cnt.dst,
-                   CAST((cnt.c * 1000000) // outs.o AS BIGINT) AS p6
+                   CAST(FLOOR((cnt.c * 1000000) / outs.o) AS BIGINT) AS p6
             FROM cnt JOIN outs ON outs.src = cnt.src
         ),
         scens AS (
-            SELECT unnest(['full', 'click', 'view', 'signup', 'error'])
-                AS scen
-        ),
+            SELECT scen FROM (VALUES ('full'), ('click'), ('view'), ('signup'), ('error')) AS t(scen)),
         trans_s AS (
             SELECT s.scen, t.src,
                    CASE WHEN t.dst = s.scen THEN 'NULL' ELSE t.dst END AS dst,
@@ -4553,7 +4338,7 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
             UNION ALL
             SELECT scen, a.st, a.st, CAST(1000000 AS BIGINT)
             FROM scens CROSS JOIN
-                 (SELECT unnest(['CONV', 'NULL']) AS st) a
+                 (SELECT st FROM (VALUES ('CONV'), ('NULL')) AS t(st)) a
         ),
         v0 AS (
             SELECT scen, 'START' AS st, CAST(1000000 AS BIGINT) AS m
@@ -4561,84 +4346,84 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         v1 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v0 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v2 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v1 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v3 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v2 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v4 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v3 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v5 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v4 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v6 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v5 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v7 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v6 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v8 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v7 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v9 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v8 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v10 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v9 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v11 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v10 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
         ),
         v12 AS (
             SELECT t.scen, t.dst AS st,
-                   CAST(SUM(v.m * t.p6) // 1000000 AS BIGINT) AS m
+                   CAST(FLOOR(SUM(v.m * t.p6) / 1000000) AS BIGINT) AS m
             FROM v11 v JOIN trans_s t
               ON t.scen = v.scen AND t.src = v.st
             GROUP BY 1, 2
@@ -5954,7 +5739,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS BIGINT) AS s
             FROM daily
         ),
-        freqs AS (SELECT unnest([1, 2, 3, 7, 14]) AS kf),
+        freqs AS (SELECT kf FROM (VALUES (1), (2), (3), (7), (14)) AS t(kf)),
         terms AS (
             SELECT event_type, kf, n,
                    CAST(SUM((n * v - s)
@@ -5973,10 +5758,10 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY event_type, kf, n
         )
         SELECT event_type, CAST(kf AS INT) AS kf, n AS n_days,
-               (CAST(CAST(sc AS VARCHAR) AS DOUBLE)
-                  * CAST(CAST(sc AS VARCHAR) AS DOUBLE)
-                + CAST(CAST(ss AS VARCHAR) AS DOUBLE)
-                  * CAST(CAST(ss AS VARCHAR) AS DOUBLE))
+               (CAST(CAST(sc AS STRING) AS DOUBLE)
+                  * CAST(CAST(sc AS STRING) AS DOUBLE)
+                + CAST(CAST(ss AS STRING) AS DOUBLE)
+                  * CAST(CAST(ss AS STRING) AS DOUBLE))
                / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
                / 1e12 AS power
         FROM terms
@@ -5999,54 +5784,7 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     /1e12 undoes q6²). Distributed shape: windows and sums are
     per-event-type over CALENDAR-BOUNDED daily aggregates; the
     frequency grid is a 5-row literal broadcast."""
-    daily = daily_q6(spark, sf_dir)
-    w = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type",
-        "v",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("d"))
-        .cast("bigint")
-        .alias("t"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("n"),
-        F.sum("v").over(w).cast("bigint").alias("s"),
-    )
-    freqs = daily.sparkSession.createDataFrame(
-        [(1,), (2,), (3,), (7,), (14,)], "kf int"
-    )
-    two_pi = F.expr("CAST('6.283185307179586' AS DOUBLE)")
-    angle = (
-        two_pi
-        * F.col("kf").cast("double")
-        * (F.col("t") - 1).cast("double")
-        / F.col("n").cast("double")
-    )
-    vc = F.col("n") * F.col("v") - F.col("s")
-    terms = (
-        idx.crossJoin(F.broadcast(freqs))
-        .groupBy("event_type", "kf", "n")
-        .agg(
-            F.sum(vc * F.cos(angle).cast("decimal(12,6)"))
-            .cast("decimal(38,6)")
-            .alias("sc"),
-            F.sum(vc * F.sin(angle).cast("decimal(12,6)"))
-            .cast("decimal(38,6)")
-            .alias("ss"),
-        )
-    )
-    nd = F.col("n").cast("double")
-    power = (
-        (as_d(F.col("sc")) * as_d(F.col("sc"))
-         + as_d(F.col("ss")) * as_d(F.col("ss")))
-        / (nd * nd * nd)
-        / F.lit(1e12)
-    )
-    return terms.select(
-        "event_type",
-        F.col("kf").cast("int").alias("kf"),
-        F.col("n").alias("n_days"),
-        power.alias("power"),
-    )
+    return run_sql(spark, sf_dir, "ts_periodogram")
 
 
 # ---------------------------------------------------------------------------
@@ -6071,8 +5809,8 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CASE WHEN b.v < a.v THEN 1 ELSE 0 END AS neg
             FROM idxed a
             JOIN idxed b ON b.event_type = a.event_type
-                        AND b.i = a.i + (a.n - a.n // 2)
-            WHERE a.i <= a.n // 2
+                        AND b.i = a.i + (a.n - CAST(FLOOR(a.n / 2) AS BIGINT))
+            WHERE a.i <= CAST(FLOOR(a.n / 2) AS BIGINT)
         )
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -6092,49 +5830,14 @@ def ts_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     half with day i + ceil(n/2) of the second half and sign-test the
     differences — the assumption-free 'is this series drifting'
     screen. Exactness: pairing index i + (n - n DIV 2) is integer
-    arithmetic (DuckDB `//` twin), daily values are exact q6 BIGINTs
+    arithmetic (FLOOR of a non-negative quotient), daily values are exact q6 BIGINTs
     so the up/down signs are exact, ties drop from the effective
     sample on both engines, and the binomial z is one double
     expression NULL-guarded by the identical n_up + n_down > 0
     predicate. Distributed shape: per-type row_number windows over
     calendar-bounded daily rows; the half-offset pairing is an
     equi-join on (event_type, index) — never a cross pairing."""
-    daily = daily_q6(spark, sf_dir)
-    w_t = Window.partitionBy("event_type").orderBy("d")
-    w_all = Window.partitionBy("event_type")
-    idxed = daily.select(
-        "event_type",
-        "v",
-        F.row_number().over(w_t).alias("i"),
-        F.count(F.lit(1)).over(w_all).alias("n"),
-    )
-    a = idxed.filter(F.col("i") <= F.expr("n DIV 2")).select(
-        "event_type",
-        (F.col("i") + (F.col("n") - F.expr("n DIV 2"))).alias("j"),
-        F.col("v").alias("va"),
-    )
-    b = idxed.select(
-        "event_type", F.col("i").alias("j"), F.col("v").alias("vb")
-    )
-    pairs = a.join(b, ["event_type", "j"]).select(
-        "event_type",
-        (F.col("vb") > F.col("va")).cast("int").alias("pos"),
-        (F.col("vb") < F.col("va")).cast("int").alias("neg"),
-    )
-    spos = F.sum("pos")
-    sneg = F.sum("neg")
-    nt = (spos + sneg).cast("double")
-    z = F.when(
-        spos + sneg > 0,
-        (spos.cast("double") - nt / F.lit(2).cast("double"))
-        / F.sqrt(nt / F.lit(4).cast("double")),
-    )
-    return pairs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        spos.cast("bigint").alias("n_up"),
-        sneg.cast("bigint").alias("n_down"),
-        z.alias("z"),
-    )
+    return run_sql(spark, sf_dir, "ts_cox_stuart")
 
 
 # ---------------------------------------------------------------------------
@@ -6460,7 +6163,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT event_type, nt,
                    CAST('0.2' AS DOUBLE)
                    * sqrt((CAST(nt AS DOUBLE)
-                             * CAST(CAST(s2 AS VARCHAR) AS DOUBLE)
+                             * CAST(CAST(s2 AS STRING) AS DOUBLE)
                            - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
                           / (CAST(nt AS DOUBLE) * CAST(nt AS DOUBLE)))
                        AS rr
@@ -6508,72 +6211,4 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     index inequality as residual — per-type pair counts are
     CALENDAR-bounded (~days^2/2, SF-invariant), never corpus-scaled;
     corpus work is the one daily agg."""
-    daily = daily_q6(spark, sf_dir)
-    w_t = Window.partitionBy("event_type").orderBy("d")
-    tmpl = (
-        daily.select(
-            "event_type",
-            "v",
-            F.lead("v", 1).over(w_t).alias("v1"),
-            F.lead("v", 2).over(w_t).alias("v2"),
-            F.row_number().over(w_t).alias("i"),
-        )
-        .filter(F.col("v2").isNotNull())
-    )
-    sig = tmpl.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("nt"),
-        F.sum("v").cast("bigint").alias("s1"),
-        F.sum(F.col("v").cast("decimal(19,0)") * F.col("v")).alias("s2"),
-    )
-    ntd = F.col("nt").cast("double")
-    rr = F.expr("CAST('0.2' AS DOUBLE)") * F.sqrt(
-        (ntd * as_d(F.col("s2")) - F.col("s1").cast("double")
-         * F.col("s1").cast("double"))
-        / (ntd * ntd)
-    )
-    r = sig.select("event_type", "nt", rr.alias("rr"))
-    a = tmpl.select(
-        "event_type",
-        F.col("i").alias("ia"),
-        F.col("v").alias("va"),
-        F.col("v1").alias("va1"),
-        F.col("v2").alias("va2"),
-    )
-    b = tmpl.select(
-        "event_type",
-        F.col("i").alias("ib"),
-        F.col("v").alias("vb"),
-        F.col("v1").alias("vb1"),
-        F.col("v2").alias("vb2"),
-    )
-    m2 = (
-        F.abs(F.col("va") - F.col("vb")).cast("double") <= F.col("rr")
-    ) & (F.abs(F.col("va1") - F.col("vb1")).cast("double") <= F.col("rr"))
-    m3 = m2 & (
-        F.abs(F.col("va2") - F.col("vb2")).cast("double") <= F.col("rr")
-    )
-    pairs = (
-        a.join(b, "event_type")
-        .filter(F.col("ib") > F.col("ia"))
-        .join(r.select("event_type", "rr"), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.sum(m2.cast("int")).cast("bigint").alias("b_cnt"),
-            F.sum(m3.cast("int")).cast("bigint").alias("a_cnt"),
-        )
-    )
-    sampen = F.when(
-        (F.col("a_cnt") > 0) & (F.col("b_cnt") > 0),
-        -as_d(
-            F.log(
-                F.col("a_cnt").cast("double") / F.col("b_cnt").cast("double")
-            ).cast("decimal(12,6)")
-        ),
-    )
-    return pairs.join(r.select("event_type", "nt"), "event_type").select(
-        "event_type",
-        F.col("nt").alias("n_templates"),
-        "b_cnt",
-        "a_cnt",
-        sampen.alias("sampen"),
-    )
+    return run_sql(spark, sf_dir, "ts_sample_entropy")

@@ -146,6 +146,19 @@ def test_rowwise_udf_agrees_with_builtin(spark, sf_dir):
     assert cmp.filter(F.col("py") != F.col("jvm")).count() == 0
 
 
+def test_plans_import_raises_no_user_warning():
+    """Importing the query registry declares every UDF without a warning,
+    so an import under ``-W error::UserWarning`` succeeds."""
+    out = subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c", "from finance_etl_spark import plans"],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+
+
 def test_python_workers_import_the_package_from_any_directory(tmp_path, sf_dir):
     """A driver started outside the checkout, on a session it built
     itself, with the repo only on its own sys.path (as __spark_entry__.py

@@ -418,6 +418,261 @@ def test_sql_text_query_matches_duckdb(spark, sf_dir, con, name):
     assert got == want
 
 
+# Off-headline builders whose oracle Spark parses (after run_sql's hint
+# strip) that stay DataFrame builders, each with why: the Spark-only path
+# it exercises, or the rule its text failed (CHANGES.md has the numbers).
+BUILDER_KEEP = {
+    # plans/curation.py
+    "cur_dedup_components": "Spark-only: calls operators/components",
+    "cur_dedup_survivors": "Spark-only: calls operators/components",
+    "cur_e2e_training_prep": "Spark-only: calls operators/ranks",
+    "cur_entity_resolution": "Spark-only: calls operators/components",
+    "cur_incremental_agg_merge": "Spark-only: cache on PERSIST_KEEP",
+    "cur_incremental_join_view": "Spark-only: cache on PERSIST_KEEP",
+    "cur_merge_upsert": "Spark-only: calls operators/merge",
+    "cur_mixture_weights": "text fails on Spark: no function list_filter",
+    "cur_pii_redact": "text fails on Spark: casts a '0x...' string to BIGINT",
+    "cur_preference_pairs": "text fails on Spark: no function list_filter",
+    "cur_winsorize_outliers": "(c) x4 corpus: text 2.469 s vs builder 1.297 s",
+    "dq_dp_noisy_counts": "text fails on Spark: casts a '0x...' string to BIGINT",
+    "dq_profile_columns": "pin: test_plan_shapes.py::test_profile_columns_single_scan fails on the text",
+    "graph_avg_neighbor_degree": "Spark-only: persist on PERSIST_KEEP",
+    "graph_bfs_distance": "Spark-only: persist on PERSIST_KEEP",
+    "graph_community_labelprop": "Spark-only: calls operators/components",
+    "graph_components_star": "Spark-only: calls operators/components",
+    "graph_eccentricity_diameter": "Spark-only: localCheckpoint",
+    "graph_edge_triangle_support": "pin: test_plan_shapes.py::test_edge_triangle_support_joins_are_key_joins fails on the text",
+    "graph_harmonic_closeness": "Spark-only: localCheckpoint",
+    "graph_kcore_peel": "Spark-only: runs operators/iterate",
+    "graph_ktruss_peel2": "Spark-only: runs operators/iterate",
+    "graph_modularity_score": "Spark-only: persist on PERSIST_KEEP",
+    "graph_pagerank_trade": "Spark-only: calls operators/pagerank",
+    "graph_path_length_histogram": "Spark-only: localCheckpoint",
+    "graph_rich_club": "(a) column types int vs bigint (builder vs text)",
+    # plans/governance.py
+    "dq_dp_binomial_counts": "text fails on Spark: casts a '0x...' string to BIGINT",
+    "dq_expectations_quarantine": "(b) parent won 5/6 reps, median 0.25 vs 0.33 s",
+    # plans/ingest_parity.py
+    "ddl_schema_evolution": "Spark-only: ingest, DDL, source or sink surface",
+    "ddl_table_roundtrip": "Spark-only: ingest, DDL, source or sink surface",
+    "dq_constraint_checks": "Spark-only: ingest, DDL, source or sink surface",
+    "ingest_csv_quoted_multiline": "Spark-only: ingest, DDL, source or sink surface",
+    "ingest_gzip_csv": "Spark-only: ingest, DDL, source or sink surface",
+    "ingest_map_lookup": "Spark-only: ingest, DDL, source or sink surface",
+    "ingest_pandas_api_parity": "Spark-only: ingest, DDL, source or sink surface",
+    "ingest_signed_amount": "Spark-only: ingest, DDL, source or sink surface",
+    "ingest_xml_roundtrip": "Spark-only: ingest, DDL, source or sink surface",
+    "sink_compact_small_files": "Spark-only: ingest, DDL, source or sink surface",
+    "sink_dynamic_partition_overwrite": "Spark-only: ingest, DDL, source or sink surface",
+    "sink_dynamic_partition_pruning": "Spark-only: ingest, DDL, source or sink surface",
+    "sink_nested_struct_pruning": "Spark-only: ingest, DDL, source or sink surface",
+    "sink_partitioned_pruning": "Spark-only: ingest, DDL, source or sink surface",
+    "sink_zorder_clustering": "Spark-only: ingest, DDL, source or sink surface",
+    "source_python_datasource": "Spark-only: ingest, DDL, source or sink surface",
+    # plans/jdbc_queries.py
+    "jdbc_incremental_load": "Spark-only: JDBC source or sink",
+    "jdbc_roundtrip_region": "Spark-only: JDBC source or sink",
+    # plans/ml.py
+    "ml_chi2_feature_select": "text fails on Spark: no function unnest",
+    "ml_feature_hashing": "text fails on Spark: no function unnest",
+    "ml_kfold_ols_eval": "(b) parent won 6/6 reps, median 2.84 vs 3.92 s",
+    "ml_naive_bayes_classify": "text fails on Spark: no function unnest",
+    "ml_perceptron_2round": "text fails on Spark: UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY.AGGREGATE_FUNCTION_MIXED_OUTER_LOCAL_REFERENCES",
+    "ml_quantile_binning": "pin: test_plan_shapes.py::test_quantile_binning_no_global_sort_window fails on the text",
+    "ml_quantile_regression_grid": "pin: test_plan_shapes.py::test_quantile_grid_factored_fanout fails on the text",
+    # plans/multimodal.py
+    "mm_binary_metadata": "text fails on Spark: no function sha256",
+    "mm_frame_sample": "text fails on Spark: no function unnest",
+    "mm_text_embedding_features": "text fails on Spark: no function list_sum",
+    # plans/relational.py
+    "agg_arg_max_struct": "(b) parent won 6/6 reps, median 0.30 vs 0.52 s",
+    "agg_bitmap_distinct": "Spark SQL surface: the builder is its own Spark SQL text",
+    "agg_grouping_id": "text fails on Spark: WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+    "agg_pivot": "Spark-only: exercises the DataFrame pivot API",
+    "agg_salted_hot_key": "Spark-only: calls operators/skew",
+    "dq_referential_integrity": "(a) text ran over 10x the builder at sf0.1: NOT IN in COUNT FILTER plans a null-aware nested-loop join",
+    "geo_grid_knn_join": "(b) parent won 6/6 reps, median 0.54 vs 1.50 s",
+    "join_aqe_skew_split": "Spark-only: localCheckpoint",
+    "join_bucketed_colocated": "Spark-only: cache on PERSIST_KEEP",
+    "join_hint_shuffle_hash": "pin: test_plan_shapes.py::test_shuffle_hash_hint_overrides_broadcast fails on the text",
+    "join_runtime_bloom_filter": "Spark-only: localCheckpoint",
+    "join_salted_hot_key": "Spark-only: calls operators/skew",
+    "null_handling_fill_drop": "Spark-only: exercises the DataFrame na.drop/na.fill API",
+    "obs_metrics_during_write": "Spark-only: exercises an Observation on a write",
+    "q14_promo_revenue": "text fails on Spark: no function strftime",
+    "sql_execute_immediate": "Spark SQL surface: the builder is its own Spark SQL text",
+    "sql_group_by_all": "Spark SQL surface: the builder is its own Spark SQL text",
+    "sql_parameterized_query": "Spark SQL surface: the builder is its own Spark SQL text",
+    "sql_pipe_syntax": "Spark SQL surface: the builder is its own Spark SQL text",
+    "sql_recursive_spine": "Spark SQL surface: the builder is its own Spark SQL text",
+    "sql_scripting_control_flow": "Spark SQL surface: the builder is its own Spark SQL text",
+    "sql_udf_create_function": "Spark SQL surface: the builder is its own Spark SQL text",
+    "sql_values_inline_table": "Spark SQL surface: the builder is its own Spark SQL text",
+    "subquery_not_in_null_aware": "Spark SQL surface: the builder is its own Spark SQL text",
+    "subquery_scalar": "Spark SQL surface: the builder is its own Spark SQL text",
+    "subquery_scalar_correlated": "Spark SQL surface: the builder is its own Spark SQL text",
+    "window_distribution_funcs": "(b) parent won 6/6 reps, median 0.32 vs 0.66 s",
+    "window_global_row_number": "Spark-only: calls operators/ranks",
+    "window_hampel_filter": "text fails on Spark: no function list",
+    "window_lag_lead_mom": "text fails on Spark: no function strftime",
+    "window_running_distinct": "text fails on Spark: no function strftime",
+    "window_trailing_distinct": "pin: test_plan_shapes.py::test_trailing_distinct_no_range_join fails on the text",
+    # plans/scalars.py
+    "array_explode_outer": "text fails on Spark: no function list_filter",
+    "json_extract_events": "text fails on Spark: no function json_extract_string",
+    "json_schema_parse": "text fails on Spark: no function json_extract_string",
+    "json_variant_extract": "text fails on Spark: no function json_extract_string",
+    "scalar_mask_pii": "text fails on Spark: casts a '0x...' string to BIGINT",
+    # plans/stats.py
+    "stat_dunn_posthoc": "Spark-only: persist on PERSIST_KEEP",
+    "stat_jackknife_ratio_se": "(b) parent won 5/6 reps, median 1.40 vs 1.67 s",
+    "stat_kendall_w": "text fails on Spark: no function strftime",
+    "stat_mannwhitney_u": "Spark-only: persist on PERSIST_KEEP",
+    # plans/streaming_queries.py
+    "stream_live_backfill_tail": "Spark-only: Structured Streaming source or sink",
+    "stream_live_cdc_to_snapshot": "Spark-only: Structured Streaming source or sink",
+    "stream_live_cusum_alarm": "Spark-only: Structured Streaming source or sink",
+    "stream_live_dedup_admission": "Spark-only: Structured Streaming source or sink",
+    "stream_live_dedup_watermark": "Spark-only: Structured Streaming source or sink",
+    "stream_live_foreachbatch_sink": "Spark-only: Structured Streaming source or sink",
+    "stream_live_observed_metrics": "Spark-only: Structured Streaming source or sink",
+    "stream_live_python_source": "Spark-only: Structured Streaming source or sink",
+    "stream_live_rocksdb_state": "Spark-only: Structured Streaming source or sink",
+    "stream_live_scd2_enrich": "Spark-only: Structured Streaming source or sink",
+    "stream_live_session_window": "Spark-only: Structured Streaming source or sink",
+    "stream_live_stateful_totals": "Spark-only: Structured Streaming source or sink",
+    "stream_live_static_enrich": "Spark-only: Structured Streaming source or sink",
+    "stream_live_stream_full_outer": "Spark-only: Structured Streaming source or sink",
+    "stream_live_stream_left_outer": "Spark-only: Structured Streaming source or sink",
+    "stream_live_topk_per_window": "Spark-only: Structured Streaming source or sink",
+    "stream_live_tumbling_agg": "Spark-only: Structured Streaming source or sink",
+    "stream_session_window": "Spark-only: Structured Streaming source or sink",
+    # plans/tableformat.py
+    "sink_bloom_file_skipping": "Spark-only: table-format sink",
+    "sink_copy_on_write_update": "Spark-only: table-format sink",
+    "sink_file_stats_skipping": "Spark-only: table-format sink",
+    "sink_manifest_count_pushdown": "Spark-only: table-format sink",
+    "sink_merge_on_read_deletes": "Spark-only: table-format sink",
+    "sink_multi_table_tx": "Spark-only: table-format sink",
+    "sink_parquet_codec_roundtrip": "Spark-only: table-format sink",
+    "sink_partition_evolution": "Spark-only: table-format sink",
+    "sink_python_datasource_writer": "Spark-only: table-format sink",
+    "sink_snapshot_time_travel": "Spark-only: table-format sink",
+    # plans/text.py
+    "text_ari_index": "text fails on Spark: no function list_filter",
+    "text_bm25_topk": "text fails on Spark: no function generate_subscripts",
+    "text_boilerplate_ngrams": "text fails on Spark: no function list_filter",
+    "text_bpe_pair_counts": "text fails on Spark: no function generate_subscripts",
+    "text_burstiness": "text fails on Spark: no function unnest",
+    "text_c4_gopher_filters": "text fails on Spark: no function generate_subscripts",
+    "text_charclass_profile": "text fails on Spark: casts a '0x...' string to BIGINT",
+    "text_chunk_overlap": "text fails on Spark: no function list_filter",
+    "text_code_detect": "text fails on Spark: no function string_split",
+    "text_containment_pairs": "Spark-only: calls operators/dedup",
+    "text_dataset_card": "text fails on Spark: no function list_filter",
+    "text_dedup_incremental_batch": "Spark-only: calls operators/dedup",
+    "text_feature_hashing": "text fails on Spark: no function generate_subscripts",
+    "text_fingerprint": "text fails on Spark: no function array_to_string",
+    "text_fuzzy_join_edit1": "Spark-only: calls operators/dedup",
+    "text_hapax_ratio": "text fails on Spark: no function unnest",
+    "text_keyword_rake": "text fails on Spark: no function generate_subscripts",
+    "text_kneser_ney_bigram": "text fails on Spark: no function generate_subscripts",
+    "text_ngram_jaccard_pairs": "Spark-only: calls operators/dedup",
+    "text_ngram_novelty": "text fails on Spark: no function list_filter",
+    "text_ngram_stats": "text fails on Spark: no function generate_subscripts",
+    "text_quality_score": "text fails on Spark: no function generate_subscripts",
+    "text_readability_fk": "text fails on Spark: no function list_filter",
+    "text_repetition_filter": "text fails on Spark: no function generate_subscripts",
+    "text_sentence_stats": "text fails on Spark: no function list_filter",
+    "text_simpson_diversity": "text fails on Spark: no function unnest",
+    "text_smog_index": "text fails on Spark: no function list_filter",
+    "text_tfidf": "text fails on Spark: no function generate_subscripts",
+    "text_token_burstiness": "text fails on Spark: no function generate_subscripts",
+    "text_token_count": "text fails on Spark: no function string_split",
+    "text_token_stats": "text fails on Spark: no function generate_subscripts",
+    "text_type_token_ratio": "text fails on Spark: no function unnest",
+    "text_winnow_fingerprint": "text fails on Spark: no function list_filter",
+    # plans/timeseries.py
+    "ts_asof_nearest": "Spark-only: calls operators/joins",
+    "ts_attribution_markov_removal": "(b) parent won 6/6 reps, median 1.80 vs 9.07 s",
+    "ts_ewma_smooth": "text fails on Spark: no function list_reduce",
+    "ts_interval_union_coverage": "text fails on Spark: no function to_minutes",
+    "ts_max_concurrency": "text fails on Spark: no function to_minutes",
+    "ts_range_join": "Spark-only: calls operators/joins",
+    "ts_range_join_bucketed": "Spark-only: calls operators/joins",
+    "ts_seasonal_mann_kendall": "text fails on Spark: no function isodow",
+    "ts_sessionize": "Spark-only: calls operators/sessionize",
+    "ts_viterbi_2state": "(b) parent won 6/6 reps, median 0.47 vs 15.47 s",
+    # plans/tpch.py
+    "q10_returned_items": "(b) parent won 5/6 reps, median 0.37 vs 0.43 s",
+    "q22_dormant_customers": "Spark SQL surface: the builder is its own Spark SQL text",
+    # plans/udf_queries.py
+    "agg_heavy_hitters": "Spark-only: Python UDF surface",
+    "udf_arrow_optimized_scalar": "Spark-only: Python UDF surface",
+    "udf_arrow_udtf_lateral": "Spark-only: Python UDF surface",
+    "udf_grouped_agg_weighted_mean": "Spark-only: Python UDF surface",
+    "udf_grouped_median": "Spark-only: Python UDF surface",
+    "udf_map_in_arrow": "Spark-only: Python UDF surface",
+    "udf_pandas_normalize": "Spark-only: Python UDF surface",
+    "udf_table_function_tokens": "Spark-only: Python UDF surface",
+    "udf_window_grouped_agg": "Spark-only: Python UDF surface",
+    # plans/vectors.py
+    "cur_active_learning_batch": "Spark-only: persist on PERSIST_KEEP",
+    "ml_logreg_gd": "Spark-only: persist on PERSIST_KEEP",
+    "vec_binary_hamming_topk": "text fails on Spark: no function list_sum",
+    "vec_cosine_histogram": "text fails on Spark: no function list_sum",
+    "vec_cosine_near_dup_pairs": "text fails on Spark: no function list_sum",
+    "vec_farthest_point_init": "Spark-only: persist on PERSIST_KEEP",
+    "vec_hard_negatives": "text fails on Spark: no function list_sum",
+    "vec_mips_topk": "text fails on Spark: no function list_sum",
+    "vec_mmr_unrolled": "Spark-only: runs operators/iterate",
+    "vec_norm_stats": "text fails on Spark: no function list_sum",
+    "vec_quantize_int8": "text fails on Spark: no function list_transform",
+    "vec_retrieval_eval": "text fails on Spark: no function list_sum",
+}
+
+
+def test_parseable_oracles_are_written_once(spark):
+    """An off-headline builder whose oracle Spark parses calls run_sql or
+    is on BUILDER_KEEP; a keep-list entry whose query no longer qualifies
+    is stale. The check parses each text and reads no data."""
+    from pyspark.errors import ParseException
+
+    from finance_etl_spark import plans
+    from finance_etl_spark.plans.registry import spark_text
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+
+    def parses(text):
+        try:
+            parser.parsePlan(spark_text(text))
+        except ParseException:
+            return False
+        return True
+
+    written_once = set(_run_sql_queries())
+    held = {
+        name
+        for _, name, _, _ in _registered_builders()
+        if name not in written_once
+        and not plans.get(name).headline
+        and plans.get(name).oracle
+        and parses(plans.get(name).oracle)
+    }
+    assert not held - BUILDER_KEEP.keys(), sorted(held - BUILDER_KEEP.keys())
+    assert not BUILDER_KEEP.keys() - held, sorted(BUILDER_KEEP.keys() - held)
+
+
+def test_no_oracle_calls_a_volatile_function():
+    """run_sql drops the MATERIALIZED hint, so Spark may evaluate a CTE at
+    each reference: that gives the same rows only while no oracle draws a
+    random number or a fresh id."""
+    from finance_etl_spark import plans
+
+    volatile = re.compile(r"\b(random|rand|uuid|gen_random_uuid)\s*\(", re.IGNORECASE)
+    assert not [n for n, text in plans.all_oracles().items() if volatile.search(text)]
+
+
 def test_no_private_imports_across_plans_modules():
     bad = []
     for p in _plans_modules():

@@ -181,8 +181,8 @@ def main(argv: list[str]) -> int:
         # Decimal('12.050') vs pandas fetchdf -> float64 12.05), so
         # they hash-fail with byte-identical raw values (r6+r7
         # `ingest_fixed_width` driver lesson). Present money as
-        # VARCHAR-routed DOUBLE (.cast('string').cast('double') /
-        # CAST(CAST(x AS VARCHAR) AS DOUBLE)) at the edge.
+        # STRING-routed DOUBLE (.cast('string').cast('double') /
+        # CAST(CAST(x AS STRING) AS DOUBLE)) at the edge.
         dec_cols = [
             f.name
             for f in sdf.schema.fields
@@ -249,7 +249,7 @@ def main(argv: list[str]) -> int:
         # Arrow column (HUGEINT sum or an uncast DECIMAL expression)
         # reaches the driver's pandas fetch as float64 while the Arrow
         # fetch yields Decimal — the two-path divergence. CAST sums to
-        # BIGINT, route money through VARCHAR->DOUBLE.
+        # BIGINT, route money through STRING->DOUBLE.
         import pyarrow as _pa
 
         d_dec = [

@@ -1,13 +1,16 @@
 """Registry inventory report: every registered query with its family,
-oracle status, headline flag, and one-line contract (first docstring
-sentence). Regenerates INVENTORY.md — the audit map from query name to
-what it claims.
+oracle status, headline flag, builder kind (``sql`` when the builder is
+its oracle text run by ``plans/registry.py::run_sql``, ``df`` otherwise)
+and one-line contract (first docstring sentence). Regenerates
+INVENTORY.md — the audit map from query name to what it claims.
 
 Usage: python tools/inventory.py
 """
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import sys
 from collections import OrderedDict
@@ -74,12 +77,29 @@ def first_sentence(doc: str) -> str:
     return d[:160]
 
 
+def sql_builders() -> set[str]:
+    """Queries whose registered builder calls ``run_sql``."""
+    out = set()
+    for path in glob.glob(os.path.join(REPO, "finance_etl_spark", "plans", "*.py")):
+        for node in ast.parse(open(path).read()).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            calls = {getattr(x.func, "id", "") for x in ast.walk(node) if isinstance(x, ast.Call)}
+            for deco in node.decorator_list:
+                if (
+                    isinstance(deco, ast.Call)
+                    and getattr(deco.func, "id", "") == "register"
+                    and "run_sql" in calls
+                ):
+                    out.add(deco.args[0].value)
+    return out
+
+
 def driver_results() -> dict[str, str]:
     """Map query -> 'driver r{N}' / 'driver r{N} FAIL' from the
     CORRECTNESS_r*.json samples the round driver leaves in the repo.
     Distinguishes driver-verified queries from local-gate-only ones —
     the driver samples ~50/round, so most queries are local-only."""
-    import glob
     import json
 
     out: dict[str, str] = {}
@@ -107,6 +127,7 @@ def main() -> int:
     n_oracle = sum(1 for s in _REGISTRY.values() if s.oracle)
     driver = driver_results()
     n_driver = sum(1 for n in _REGISTRY if n in driver)
+    sql = sql_builders()
     lines = [
         "# INVENTORY — every registered query",
         "",
@@ -114,6 +135,10 @@ def main() -> int:
         f"{n_oracle} with full DuckDB value-hash oracles, "
         f"{n_total - n_oracle} rows-only (each with a dedicated pytest "
         "pinning its semantics). `headline` queries form the bench set.",
+        "",
+        f"`builder`: **sql** = written once, the builder runs the oracle "
+        f"text on Spark (`plans/registry.py::run_sql`; {len(sql)}/{n_total} "
+        "queries); **df** = a DataFrame builder.",
         "",
         f"`verified` distinguishes evidence strength: **driver r{{N}}** = "
         f"hash-verified by the round driver's independent sample "
@@ -128,23 +153,31 @@ def main() -> int:
         if not specs:
             continue
         lines += [f"## {title} ({len(specs)})", ""]
-        lines += ["| query | oracle | verified | contract |", "|---|---|---|---|"]
+        lines += [
+            "| query | oracle | builder | verified | contract |",
+            "|---|---|---|---|---|",
+        ]
         for s in specs:
             mark = "hash" if s.oracle else "rows-only"
             star = " **headline**" if s.headline else ""
+            kind = "sql" if s.name in sql else "df"
             ver = driver.get(s.name, "local")
             lines.append(
-                f"| `{s.name}`{star} | {mark} | {ver} | {first_sentence(s.doc)} |"
+                f"| `{s.name}`{star} | {mark} | {kind} | {ver} | {first_sentence(s.doc)} |"
             )
         lines.append("")
     for fam, specs in sorted(groups.items()):  # anything uncategorized
         lines += [f"## {fam} ({len(specs)})", ""]
-        lines += ["| query | oracle | verified | contract |", "|---|---|---|---|"]
+        lines += [
+            "| query | oracle | builder | verified | contract |",
+            "|---|---|---|---|---|",
+        ]
         for s in specs:
             mark = "hash" if s.oracle else "rows-only"
+            kind = "sql" if s.name in sql else "df"
             ver = driver.get(s.name, "local")
             lines.append(
-                f"| `{s.name}` | {mark} | {ver} | {first_sentence(s.doc)} |"
+                f"| `{s.name}` | {mark} | {kind} | {ver} | {first_sentence(s.doc)} |"
             )
         lines.append("")
     with open(os.path.join(REPO, "INVENTORY.md"), "w") as f:
