@@ -1,1 +1,1 @@
-from finance_etl_spark.io.readers import TABLES, load_table, load_tables, register_views  # noqa: F401
+from finance_etl_spark.io.readers import TABLES, load_table, register_views  # noqa: F401

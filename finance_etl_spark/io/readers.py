@@ -230,12 +230,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_event_ts(df) if name == "events" else df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> None:

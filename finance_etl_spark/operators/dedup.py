@@ -369,8 +369,9 @@ def ngram_pair_counts(
     Formulation note (measured at sf0.1): the hash is applied AFTER the
     explode, as a plain row projection — whole-stage-codegen'd xxhash64
     at ~ns/row. Hashing inside the higher-order gram lambda instead
-    (xxhash64 per token + per gram) evaluates interpreted and measured
-    5x slower per document; see hashed_shingle_array's caveat."""
+    (xxhash64 per token + per gram) evaluates interpreted: higher-order
+    lambdas do not codegen, and that shape measured ~14 ms per document
+    against ~2.7 ms for this one."""
     # The ARRAY relation is the persisted root: sizes (map-side), the
     # exploded index, AND the downstream size joins all re-derive from
     # the cache instead of re-running tokenize+gram per consumer
@@ -399,37 +400,3 @@ def ngram_pair_counts(
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     return sizes, common
-
-
-def hashed_shingle_array(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, sh_h array<long>): per-doc DISTINCT hashed word n-grams
-    without ever materializing shingle strings — tokens hash once
-    (xxhash64), each n-gram hashes the n token-hashes (xxhash64 over
-    longs), and distinctness applies to the longs. Saves the
-    concat_ws string build + string distinct + string shuffle of the
-    textual path; semantically identical to hashing shingle_array's
-    strings modulo 64-bit collisions (~1e-11 at 1e9-shingle scale).
-
-    CAVEAT (measured, sf0.1): xxhash64 inside higher-order lambdas
-    evaluates INTERPRETED — ~14 ms/doc vs ~2.7 ms/doc for the string
-    gram build + post-explode codegen'd hash. Prefer
-    ``ngram_pair_counts``'s explode-then-hash shape in hot paths; this
-    operator exists for pipelines that need the per-doc hashed ARRAY
-    itself (e.g. feeding aggregate() folds) where the explode is not
-    wanted."""
-    base = df.select(
-        F.col(id_col),
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("__toks"),
-    )
-    th = F.transform(F.col("__toks"), lambda t: F.xxhash64(t))
-    base = base.select(F.col(id_col), th.alias("__th"))
-    toks = F.col("__th")
-    n_tok = F.size(toks)
-    idx = F.sequence(F.lit(0), n_tok - n)
-    gram = lambda i: F.xxhash64(*[F.get(toks, i + j) for j in range(n)])  # noqa: E731
-    sh_h = F.when(
-        n_tok >= n, F.array_distinct(F.transform(idx, gram))
-    ).otherwise(F.array().cast("array<long>"))
-    return base.select(F.col(id_col), sh_h.alias("sh_h"))

@@ -356,50 +356,7 @@ def fin_fifo_cost_basis(spark: SparkSession, sf_dir: str) -> DataFrame:
     (amortized: total output rows <= buys + sells per key). The %25
     key sample keeps oracle output bounded; the plan is SF-invariant.
     """
-    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 25 == 0)
-
-    def lots(flag: str, keep_price: bool) -> DataFrame:
-        w = (
-            Window.partitionBy("l_partkey")
-            .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        qty = F.col("l_quantity").cast(DEC)
-        df = (
-            l.filter(F.col("l_returnflag") == flag)
-            .withColumn("hi", F.sum(qty).over(w))
-            .withColumn("lo", F.col("hi") - qty)
-        )
-        cols = ["l_partkey", "l_orderkey", "l_linenumber", "lo", "hi"]
-        if keep_price:
-            cols += ["l_extendedprice", "l_quantity"]
-        return df.select(*cols)
-
-    buys = lots("N", keep_price=True).alias("b")
-    sells = lots("R", keep_price=False).alias("s")
-    alloc = F.least(F.col("b.hi"), F.col("s.hi")) - F.greatest(
-        F.col("b.lo"), F.col("s.lo")
-    )
-    return (
-        sells.join(
-            buys,
-            (F.col("s.l_partkey") == F.col("b.l_partkey"))
-            & (F.col("b.lo") < F.col("s.hi"))
-            & (F.col("s.lo") < F.col("b.hi")),
-        )
-        .select(
-            F.col("s.l_partkey").alias("partkey"),
-            F.col("s.l_orderkey").alias("sell_order"),
-            F.col("s.l_linenumber").alias("sell_line"),
-            F.col("b.l_orderkey").alias("buy_order"),
-            F.col("b.l_linenumber").alias("buy_line"),
-            alloc.cast("double").alias("alloc_qty"),
-            (
-                alloc.cast("double")
-                * (F.col("b.l_extendedprice") / F.col("b.l_quantity"))
-            ).alias("alloc_cost"),
-        )
-    )
+    return run_sql(spark, sf_dir, "fin_fifo_cost_basis")
 
 
 @register(

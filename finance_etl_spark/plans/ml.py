@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import (
     as_d,
+    cents,
+    dsum_cents,
     fsum,
     o_fsum,
     o_ordered_fold_sum,
@@ -515,45 +517,21 @@ def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded values as before (min-of-5 at sf0.1:
     0.92 s -> 0.55 s)."""
     li = load_table(spark, sf_dir, "lineitem")
-
-    def cents(c: str):
-        return (F.col(c) * 100 + F.lit(0.5)).cast("long")
-
-    d38 = "decimal(38,0)"
-    q, x, p = cents("l_quantity"), cents("l_discount"), cents("l_extendedprice")
-    s = (
-        li.select(q.alias("q"), x.alias("x"), p.alias("p"))
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            F.sum(F.col("q").cast(d38)).alias("S1"),
-            F.sum(F.col("x").cast(d38)).alias("S2"),
-            F.sum((F.col("q") * F.col("q")).cast(d38)).alias("S11"),
-            F.sum((F.col("q") * F.col("x")).cast(d38)).alias("S12"),
-            F.sum((F.col("x") * F.col("x")).cast(d38)).alias("S22"),
-            F.sum(F.col("p").cast(d38)).alias("SY"),
-            F.sum((F.col("q") * F.col("p")).cast(d38)).alias("S1Y"),
-            F.sum((F.col("x") * F.col("p")).cast(d38)).alias("S2Y"),
-        )
-    )
-
-    def unscale(col: str, k: int):
-        # decimal(30,0) / decimal(9,0) plans as decimal(36,6): exact
-        # for these scale-2/scale-4 rationals, so the double cast is
-        # the same correctly-rounded value the decimal-sum cast gave
-        return (
-            F.col(col).cast("decimal(30,0)") / F.lit(k).cast("decimal(9,0)")
-        ).cast("double")
-
-    s = s.select(
-        "n",
-        unscale("S1", 100).alias("s1"),
-        unscale("S2", 100).alias("s2"),
-        unscale("S11", 10000).alias("s11"),
-        unscale("S12", 10000).alias("s12"),
-        unscale("S22", 10000).alias("s22"),
-        unscale("SY", 100).alias("sy"),
-        unscale("S1Y", 10000).alias("s1y"),
-        unscale("S2Y", 10000).alias("s2y"),
+    q, x, p = F.col("q"), F.col("x"), F.col("p")
+    s = li.select(
+        cents("l_quantity").alias("q"),
+        cents("l_discount").alias("x"),
+        cents("l_extendedprice").alias("p"),
+    ).agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        dsum_cents(q, 100).alias("s1"),
+        dsum_cents(x, 100).alias("s2"),
+        dsum_cents(q * q, 10000).alias("s11"),
+        dsum_cents(q * x, 10000).alias("s12"),
+        dsum_cents(x * x, 10000).alias("s22"),
+        dsum_cents(p, 100).alias("sy"),
+        dsum_cents(q * p, 10000).alias("s1y"),
+        dsum_cents(x * p, 10000).alias("s2y"),
     )
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
     s11, s12, s22 = F.col("s11"), F.col("s12"), F.col("s22")
@@ -5404,7 +5382,7 @@ def ml_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
        per-slope sums of non-negative/negative residuals — exact
        distributivity over exact decimals — so the corpus fans out
        x41, not x123, and the taus reconstruct on the 41-row model.
-    2. Long-cents inner loop (the ml_ols_normal_equations recipe):
+    2. Long-cents inner loop (money.cents, as ml_ols_normal_equations):
        residuals are pure long arithmetic; sums accumulate in
        DECIMAL(38,0) (compact fast path, overflow-safe at any SF); the
        exact scale restores at the 41-row edge via one exact division.
@@ -5418,7 +5396,6 @@ def ml_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finance_etl_spark.io.readers import load_table_parallel
 
     li = load_table_parallel(spark, sf_dir, "lineitem")
-    cents = lambda c: (F.col(c) * 100 + F.lit(0.5)).cast("long")  # noqa: E731
     rows = li.select(
         cents("l_extendedprice").alias("y_c"), cents("l_quantity").alias("x_c")
     )

@@ -82,16 +82,9 @@ def o_ret_q9(cur: str, prev: str) -> str:
     )
 
 
-def dd_q6(peak: Column, x: Column) -> Column:
+def o_dd_q6(peak: str, x: str) -> str:
     """Drawdown of x below its running peak in percent, floored to
     integer 1e-6 units (BIGINT) off VARCHAR-routed decimal operands."""
-    return F.floor(
-        (as_d(peak) - as_d(x)) / as_d(peak) * F.lit(100.0) * F.lit(1e6)
-    ).cast("bigint")
-
-
-def o_dd_q6(peak: str, x: str) -> str:
-    """DuckDB twin of dd_q6."""
     return (
         f"CAST(FLOOR((CAST(CAST({peak} AS STRING) AS DOUBLE)"
         f" - CAST(CAST({x} AS STRING) AS DOUBLE))"

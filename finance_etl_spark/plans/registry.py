@@ -59,11 +59,14 @@ DuckDB both parse the oracle text and return the same rows, names and
 types, the builder is ``return run_sql(spark, sf_dir, "<name>")`` and
 there is no DataFrame twin (tests/test_recipes.py::
 test_parseable_oracles_are_written_once fails on a builder whose oracle
-parses on Spark and that is not on its keep-list). Keep a DataFrame
-builder only where it exercises a Spark-only path (operators, UDFs,
-streams, sinks) or where the text is slower at sf0.1 or scales worse
-(a ``NOT IN`` subquery inside an aggregate plans as a null-aware
-nested-loop join; a pairwise ``a.x > b.x`` join is quadratic).
+parses on Spark and that is not on its keep-list; the rule holds for
+the headline set too). Keep a DataFrame builder only where it exercises
+a Spark-only path (operators, UDFs, streams, sinks), where a plan-shape
+pin fails on the text, or where the text is slower at sf0.1 or scales
+worse (a ``NOT IN`` subquery inside an aggregate plans as a null-aware
+nested-loop join; a pairwise ``a.x > b.x`` join is quadratic; an
+oracle's decimal sums lose the builder's long-cents fast path in
+q1_pricing_summary and ml_ols_normal_equations).
 
 Spellings both engines parse, for DuckDB-only ones:
 - ``CAST(x AS STRING)`` for ``CAST(x AS VARCHAR)`` (DuckDB reads STRING

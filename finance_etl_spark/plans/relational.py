@@ -172,16 +172,7 @@ def filter_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_inner_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈dim equi-join + aggregation; dim side broadcast."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey, "inner")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("total_revenue"),
-        )
-    )
+    return run_sql(spark, sf_dir, "join_inner_agg")
 
 
 @register(
@@ -261,22 +252,9 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_broadcast_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snowflake dim chain: fact ⋈ broadcast(nation) ⋈ broadcast(region).
-
-    Both dims broadcast — zero shuffles until the final aggregation.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            dsum("c_acctbal").alias("total_acctbal"),
-        )
-    )
+    """Snowflake dim chain: fact ⋈ nation ⋈ region, both dims broadcast
+    — zero shuffles until the final aggregation."""
+    return run_sql(spark, sf_dir, "join_broadcast_chain")
 
 
 @register(
@@ -432,18 +410,9 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per market segment: row_number with a unique
-    tiebreaker (orderkey) so results are total-order deterministic."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select("c_mktsegment", "o_orderkey", "o_totalprice")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-    )
+    tiebreaker (orderkey) so results are total-order deterministic; the
+    window is hash-partitioned on the segment."""
+    return run_sql(spark, sf_dir, "window_topk_per_group")
 
 
 @register(
@@ -992,32 +961,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final top-10 plans as TakeOrderedAndProject — each partition
     keeps 10 rows, the driver merges, nothing resembling a global sort.
     Unique l_orderkey tiebreak makes the LIMIT deterministic."""
-    cutoff = F.lit("1997-03-15").cast("timestamp")
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") < cutoff)
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate") > cutoff)
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum(revenue).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-    )
+    return run_sql(spark, sf_dir, "q3_shipping_priority")
 
 
 @register(
@@ -1410,66 +1354,12 @@ def window_interval_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-supplier-volume report (TPC-H Q5 shape): revenue from
     lineitems where the ordering customer and the supplying supplier
-    sit in the same (Asian) nation. The 6-way join is ordered so the
-    region→nation restriction broadcasts into BOTH dimension paths
-    first (customer and supplier shrink to Asian rows before any fact
-    shuffle), the two fact joins shuffle on their natural keys
-    (orders⋈customer on custkey, lineitem⋈orders on orderkey), and the
-    same-nation predicate is an equi-join conjunct on the supplier
-    join — a hash join, not a post-join filter over a wider product.
-    The final agg carries ≤|nation| groups."""
-    asia_nations = (
-        load_table(spark, sf_dir, "nation")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "region").filter(
-                    F.col("r_name") == "ASIA"
-                )
-            ),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("n_nationkey", "n_name")
-    )
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(asia_nations),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-            "left_semi",
-        )
-        .select("c_custkey", "c_nationkey")
-    )
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(asia_nations),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_nationkey", "n_name")
-    )
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
-        )
-        .select("o_orderkey", "o_custkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .join(
-            s,
-            (li.l_suppkey == s.s_suppkey)
-            & (c.c_nationkey == s.s_nationkey),
-        )
-        .groupBy("n_name")
-        .agg(dsum(revenue).alias("revenue"))
-    )
+    sit in the same (Asian) nation. The same-nation predicate is an
+    equi-join conjunct on the supplier join — a hash join, not a
+    post-join filter over a wider product. At the shipped SFs every
+    join broadcasts (the date-filtered orders side included), so the
+    only shuffle is the final agg over ≤|nation| groups."""
+    return run_sql(spark, sf_dir, "q5_local_supplier_volume")
 
 
 _NOT_IN_FROM_SQL = """

@@ -85,6 +85,28 @@ def test_ab_different_rows_exits_nonzero(run, tmp_path):
     assert not rec["rows_equal"]
 
 
+def test_import_raises_retained_stages_for_any_session():
+    """A batch script that imports probe and builds its own get_spark()
+    session, as a batch of A/Bs does, keeps the stage history that
+    run_once needs past Spark's default of 1,000 stages."""
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    code = (
+        "import probe\n"
+        "from finance_etl_spark.session import get_spark\n"
+        "conf = get_spark('batch').sparkContext.getConf()\n"
+        "print(conf.get('spark.ui.retainedStages'))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=TOOLS,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.stdout.split()[-1:] == ["100000"], out.stderr[-2000:]
+
+
 def test_ab_gate_ignores_loadavg_on_an_idle_host(monkeypatch):
     """The gate reads the CPU share other processes used, not the
     1-minute loadavg, which still carries the probe's own previous rep."""

@@ -84,9 +84,13 @@ from spans import STAGE_FIELDS, Tracer  # noqa: E402
 RUNS = {"time": 3, "ab": 6, "scale": 2}
 # Past spark.ui.retainedStages (default 1000) Spark evicts skipped stages
 # first, and the Tracer looks up every stage of a span's jobs, so a long
-# probe would fail on a stage its last job skipped. Applies to a JVM this
-# process launches.
+# probe would fail on a stage its last job skipped. Set on import, so it
+# reaches any JVM this process launches later, whoever calls get_spark.
 RETAINED_STAGES = 100_000
+os.environ.setdefault(
+    "PYSPARK_SUBMIT_ARGS",
+    f"--conf spark.ui.retainedStages={RETAINED_STAGES} pyspark-shell",
+)
 # ab's gate: the share of all CPUs that other processes may use
 GATE_LOAD = 0.25
 GATE_WINDOW_S = 0.5
@@ -319,10 +323,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "plans" and not args.out:
         p.error("plans needs --out")
     runs = args.runs or RUNS.get(args.mode, 1)
-    os.environ.setdefault(
-        "PYSPARK_SUBMIT_ARGS",
-        f"--conf spark.ui.retainedStages={RETAINED_STAGES} pyspark-shell",
-    )
     spark = get_spark("probe")
 
     if args.mode == "time":
