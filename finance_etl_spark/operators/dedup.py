@@ -47,20 +47,6 @@ def shingle_array(
     return base.select(F.col(id_col), sh_arr.alias("sh_arr"))
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle): exploded relational form of ``shingle_array``.
-
-    PERF CAVEAT (measured at sf0.1): exploding the UNMATERIALIZED
-    computed array re-evaluates the gram-build expression per
-    generated row — 11.9 s vs 2.8 s for persist-the-array-then-
-    explode on the same 260k-shingle relation. In hot paths persist
-    ``shingle_array``'s result first and explode from the cache (see
-    ngram_pair_counts, cur_decontaminate)."""
-    return shingle_array(df, id_col, text_col, n).select(
-        F.col(id_col), F.explode("sh_arr").alias("shingle")
-    )
-
-
 def _hashed_shingles(arr: DataFrame, id_col: str) -> DataFrame:
     """(id, __hs array<long>): per-doc shingle hashes — xxhash64 masked
     to 31 bits so a*h+b stays < 2^62 (no long overflow under ANSI

@@ -255,7 +255,7 @@ _DEFAULT_RATE = 0.10
 
 def _strat_oracle() -> str:
     # gate: md5 first 4 hex digits as a uniform 16-bit bucket
-    gate = "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT)"
+    gate = "CAST('0x' || substr(md5(CAST(doc_id AS STRING)), 1, 4) AS BIGINT)"
     whens = " ".join(
         f"WHEN lang = '{k}' THEN {int(v * 65536)}" for k, v in _STRATA_RATES.items()
     )
@@ -329,7 +329,7 @@ def cur_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontam_oracle() -> str:
-    gate = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)"
+    gate = "substr(md5(CAST(doc_id AS STRING)), 1, 2)"
     return f"""
         WITH toks AS ({TOKENS_SQL}),
         sh AS (
@@ -408,7 +408,7 @@ def cur_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH per_src AS (
             SELECT source,
                    CAST(COUNT(*) AS BIGINT) AS n_docs,
-                   CAST(SUM(len(list_filter(string_split(text, ' '),
+                   CAST(SUM(array_length(filter(string_split(text, ' '),
                                             t -> t <> ''))) AS BIGINT)
                        AS n_tokens
             FROM documents GROUP BY 1
@@ -433,37 +433,12 @@ def cur_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision for every corpus source in one pass.
 
     One map-side token count + one hash agg keyed by source; the
-    totals relation is ONE row, joined back with an explicit broadcast
-    cross join — no second scan, no global window. Source cardinality
+    totals relation is ONE row, cross-joined back (a broadcast) — no
+    second scan, no global window. Source cardinality
     is bounded (corpus registry), so the final join output is tiny at
     any SF.
     """
-    d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
-    per_src = (
-        d.select("source", n_tok.alias("__nt"))
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("__nt").alias("n_tokens"),
-        )
-    )
-    totals = per_src.agg(
-        F.sum("n_docs").alias("__total_docs"),
-        F.count("*").alias("__n_sources"),
-    )
-    frac = F.col("n_docs") / F.col("__total_docs").cast("double")
-    weight = (F.lit(1.0) / F.col("__n_sources")) / frac
-    return (
-        per_src.crossJoin(F.broadcast(totals))
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            frac.alias("frac"),
-            weight.alias("weight"),
-        )
-    )
+    return run_sql(spark, sf_dir, "cur_mixture_weights")
 
 
 @register(
@@ -552,8 +527,8 @@ def cur_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH toks AS (
             SELECT doc_id,
-                   substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
-                   CAST(len(list_filter(string_split(text, ' '),
+                   substr(md5(CAST(doc_id AS STRING)), 1, 2) AS shard,
+                   CAST(array_length(filter(string_split(text, ' '),
                                         t -> t <> '')) AS BIGINT) AS n_tok
             FROM documents
         ),
@@ -588,27 +563,7 @@ def cur_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits shards, not the ordering. The same shard key drives the
     deterministic split/sample ops (cur_hash_split), so packing
     composes with them without another shuffle key."""
-    d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
-    toks = d.select(
-        "doc_id",
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2).alias("shard"),
-        n_tok.cast("long").alias("n_tok"),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    seq_id = F.floor((F.sum("n_tok").over(w) - F.col("n_tok")) / 2048)
-    return (
-        toks.withColumn("seq_id", seq_id)
-        .groupBy("shard", "seq_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("n_tokens"),
-        )
-    )
+    return run_sql(spark, sf_dir, "cur_sequence_pack")
 
 
 @register(
@@ -1043,12 +998,12 @@ def cur_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(SUM(CAST(CAST('0x' || substr(md5(
-                   CAST(o_orderkey AS VARCHAR) || '#' ||
-                   CAST(o_custkey AS VARCHAR) || '#' ||
+                   CAST(o_orderkey AS STRING) || '#' ||
+                   CAST(o_custkey AS STRING) || '#' ||
                    o_orderstatus || '#' ||
                    strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') || '#' ||
-                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR)
-               ), 1, 15) AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS digest
+                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS STRING)
+               ), 1, 15) AS BIGINT) AS DECIMAL(38,0))) AS STRING) AS digest
         FROM orders
     """,
 )
@@ -1202,7 +1157,7 @@ def cur_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(((rn - 1) * 10) // n AS BIGINT) AS decile,
                CAST(COUNT(*) AS BIGINT) AS n_customers,
                CAST(SUM(frequency) AS BIGINT) AS total_orders,
-               CAST(CAST(SUM(monetary_dec) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(SUM(monetary_dec) AS STRING) AS DOUBLE)
                    AS total_spend,
                MAX(last_order) AS most_recent
         FROM ranked
@@ -1785,7 +1740,7 @@ def weighted_sample(
         WITH base AS (
             SELECT o_orderkey, o_custkey, o_totalprice,
                    CAST('0x' || substr(md5('ws0#'
-                        || CAST(o_orderkey AS VARCHAR)), 1, 15) AS BIGINT)
+                        || CAST(o_orderkey AS STRING)), 1, 15) AS BIGINT)
                        AS h,
                    CAST(CAST(o_totalprice AS DECIMAL(18,6)) * 1000000
                         AS BIGINT) AS wq
@@ -2088,7 +2043,7 @@ def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH scored AS (
             SELECT doc_id, source, lang, n_chars,
-                   len(list_filter(string_split(text, ' '), t -> t <> ''))
+                   array_length(filter(string_split(text, ' '), t -> t <> ''))
                        AS n_toks
             FROM documents
         ),
@@ -2226,7 +2181,7 @@ def cur_bitemporal_asknown(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH caps AS MATERIALIZED (
             SELECT source,
-                   CAST(SUM(len(list_filter(string_split(text, ' '),
+                   CAST(SUM(array_length(filter(string_split(text, ' '),
                                             t -> t <> ''))) AS BIGINT) AS cap
             FROM documents GROUP BY source
         ),
@@ -2364,7 +2319,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH sharded AS (
             SELECT doc_id, n_chars,
-                   CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
+                   CAST('0x' || substr(md5(CAST(doc_id AS STRING)), 1, 1)
                         AS BIGINT) % 4 AS shard
             FROM documents
         ),
@@ -2443,8 +2398,8 @@ def cur_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH toks AS ({TOKENS_SQL}),
         flagged AS (
             SELECT doc_id, pos,
-                   substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                              || CAST(pos AS VARCHAR)), 1, 2) < '27'
+                   substr(md5(CAST(doc_id AS STRING) || ':'
+                              || CAST(pos AS STRING)), 1, 2) < '27'
                        AS masked
             FROM toks
         ),
@@ -2644,16 +2599,16 @@ _E2E_MIN_TOKENS = 30
     oracle=f"""
         WITH toks AS MATERIALIZED (
             SELECT doc_id, lang, text,
-                   list_filter(string_split(text, ' '), x -> x <> '') AS t
+                   filter(string_split(text, ' '), x -> x <> '') AS t
             FROM documents
         ),
         quality AS (
             SELECT doc_id, lang, text,
-                   len(t) AS n_tokens,
-                   CAST(len(list_filter(t,
+                   array_length(t) AS n_tokens,
+                   CAST(array_length(filter(t,
                        x -> x IN {tuple(STOPWORDS)})) AS DOUBLE)
-                     / CAST(len(t) AS DOUBLE) AS stop_ratio
-            FROM toks WHERE len(t) >= {_E2E_MIN_TOKENS}
+                     / CAST(array_length(t) AS DOUBLE) AS stop_ratio
+            FROM toks WHERE array_length(t) >= {_E2E_MIN_TOKENS}
         ),
         gated AS (SELECT * FROM quality WHERE stop_ratio > 0),
         deduped AS (
@@ -2912,14 +2867,14 @@ _EPOCH_BUDGET = 100_000
         tot AS (SELECT SUM(wq) AS total_wq FROM per_dom),
         budgets AS (
             SELECT source, lang, n_docs,
-                   CAST(FLOOR(CAST(CAST(wq AS VARCHAR) AS DOUBLE)
-                        / CAST(CAST(total_wq AS VARCHAR) AS DOUBLE)
+                   CAST(FLOOR(CAST(CAST(wq AS STRING) AS DOUBLE)
+                        / CAST(CAST(total_wq AS STRING) AS DOUBLE)
                         * {_EPOCH_BUDGET}) AS BIGINT) AS budget
             FROM per_dom, tot
         ),
         sel AS (
             SELECT d.source, d.lang, d.doc_id,
-                   CASE WHEN CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)
+                   CASE WHEN CAST('0x' || substr(md5(CAST(d.doc_id AS STRING)
                                   || '#{_EPOCH_KEY}'), 1, 4) AS BIGINT)
                              < LEAST(65536, (b.budget * 65536) // b.n_docs)
                         THEN 1 ELSE 0 END AS keep
@@ -3029,7 +2984,7 @@ _CHUNK_CTX = 512  # tokens per packed training context
     oracle=f"""
         WITH toks AS (
             SELECT doc_id,
-                   CAST(len(list_filter(string_split(text, ' '),
+                   CAST(array_length(filter(string_split(text, ' '),
                         t -> t <> '')) AS BIGINT) AS n_tok
             FROM documents
         ),
@@ -3521,9 +3476,9 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         norms AS (
             SELECT
                 sqrt(CAST(CAST((SELECT SUM(CAST(a AS DECIMAL(19,0)) * a)
-                                FROM a4) AS VARCHAR) AS DOUBLE)) AS na,
+                                FROM a4) AS STRING) AS DOUBLE)) AS na,
                 sqrt(CAST(CAST((SELECT SUM(CAST(h AS DECIMAL(19,0)) * h)
-                                FROM h4) AS VARCHAR) AS DOUBLE)) AS nh
+                                FROM h4) AS STRING) AS DOUBLE)) AS nh
         )
         SELECT a4.v AS nationkey, a4.a AS auth_raw, h4.h AS hub_raw,
                CAST(a4.a AS DOUBLE) / norms.na AS authority,
@@ -3626,7 +3581,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH scored AS (
             SELECT doc_id, lang, n_chars,
-                   CAST('0x' || substr(md5('rej:' || CAST(doc_id AS VARCHAR)),
+                   CAST('0x' || substr(md5('rej:' || CAST(doc_id AS STRING)),
                         1, 15) AS BIGINT) AS h
             FROM documents
         ),
@@ -3780,12 +3735,12 @@ _KATZ_EDGE_SQL = """
             GROUP BY n.v
         )
         SELECT c1.v AS nationkey,
-               CAST(CAST(c1.c AS VARCHAR) AS DOUBLE) AS walks1,
-               CAST(CAST(c2.c AS VARCHAR) AS DOUBLE) AS walks2,
-               CAST(CAST(c3.c AS VARCHAR) AS DOUBLE) AS walks3,
-               CAST(CAST(c1.c AS VARCHAR) AS DOUBLE) * CAST(1e-2 AS DOUBLE)
-                 + CAST(CAST(c2.c AS VARCHAR) AS DOUBLE) * CAST(1e-4 AS DOUBLE)
-                 + CAST(CAST(c3.c AS VARCHAR) AS DOUBLE) * CAST(1e-6 AS DOUBLE)
+               CAST(CAST(c1.c AS STRING) AS DOUBLE) AS walks1,
+               CAST(CAST(c2.c AS STRING) AS DOUBLE) AS walks2,
+               CAST(CAST(c3.c AS STRING) AS DOUBLE) AS walks3,
+               CAST(CAST(c1.c AS STRING) AS DOUBLE) * CAST(1e-2 AS DOUBLE)
+                 + CAST(CAST(c2.c AS STRING) AS DOUBLE) * CAST(1e-4 AS DOUBLE)
+                 + CAST(CAST(c3.c AS STRING) AS DOUBLE) * CAST(1e-6 AS DOUBLE)
                    AS katz
         FROM c1 JOIN c2 ON c2.v = c1.v JOIN c3 ON c3.v = c1.v
         ORDER BY nationkey

@@ -105,7 +105,7 @@ _FX_RATES_SQL = f"""
               ON o.c_nationkey = r.n_nationkey AND o.od >= r.rd
         )
         SELECT n.n_name, COUNT(*) AS n_orders,
-               CAST(CAST(SUM(local_milli) AS VARCHAR) AS DOUBLE) / 1000.0
+               CAST(CAST(SUM(local_milli) AS STRING) AS DOUBLE) / 1000.0
                    AS local_total,
                {o_dsum('o_totalprice')} AS base_total
         FROM conv JOIN nation n ON conv.c_nationkey = n.n_nationkey
@@ -221,7 +221,7 @@ def fin_trial_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(30,10))
                              * date_diff('day', CAST(o.o_orderdate AS DATE),
                                          CAST(l.l_shipdate AS DATE)))
-                    AS VARCHAR) AS DOUBLE) * (0.05 / 360.0) AS accrued_interest
+                    AS STRING) AS DOUBLE) * (0.05 / 360.0) AS accrued_interest
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         WHERE CAST(l.l_shipdate AS DATE) >= CAST(o.o_orderdate AS DATE)
         GROUP BY year(o.o_orderdate)
@@ -454,25 +454,6 @@ def fin_var_historical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Progressive fee schedule: (lower bound, marginal rate in basis points).
 _FEE_TIERS = ((0, 50), (50_000, 30), (150_000, 10))
-
-
-def _tier_fee_expr(amount):
-    """Marginal (progressive) fee in EXACT basis points x decimal:
-    each tier charges its rate on the slice of the amount inside the
-    tier — the tax-bracket formula. All arithmetic stays decimal x
-    integer until the single presentation division by 10_000."""
-    total = None
-    bounds = [t[0] for t in _FEE_TIERS] + [None]
-    for (lo, bps), hi in zip(_FEE_TIERS, bounds[1:]):
-        width = (
-            F.least(amount, F.lit(hi)) - F.lit(lo)
-            if hi is not None
-            else amount - F.lit(lo)
-        )
-        slice_amt = F.greatest(width, F.lit(0).cast(DEC)).cast(DEC)
-        part = slice_amt * bps
-        total = part if total is None else total + part
-    return total
 
 
 def _tier_fee_sql(amount: str) -> str:
@@ -719,7 +700,7 @@ def _irr_oracle(iters: int = 80) -> str:
         )
         SELECT c.k AS o_orderkey, c.n_flows,
                CAST(CAST(CAST(0.5 * (b.lo + b.hi) AS DECIMAL(12,6))
-                    AS VARCHAR) AS DOUBLE) AS irr
+                    AS STRING) AS DOUBLE) AS irr
         FROM counts c LEFT JOIN {prev} b ON b.k = c.k
         ORDER BY o_orderkey
     """
@@ -890,10 +871,10 @@ def fin_currency_triangulation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT CAST((SELECT nt FROM t) AS BIGINT) AS n_days,
                CAST(COUNT(*) AS BIGINT) AS n_cells,
-               CAST(CAST(SUM(ncov) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(SUM(ncov) AS STRING) AS DOUBLE)
                  / ((SELECT nt FROM t) * ((SELECT nt FROM t) - 1.0))
                  / (25.0 * 25.0) AS port_variance,
-               1.645 * sqrt(CAST(CAST(SUM(ncov) AS VARCHAR) AS DOUBLE)
+               1.645 * sqrt(CAST(CAST(SUM(ncov) AS STRING) AS DOUBLE)
                  / ((SELECT nt FROM t) * ((SELECT nt FROM t) - 1.0))
                  / (25.0 * 25.0)) AS var95
         FROM cells
@@ -1085,9 +1066,9 @@ _AMORT_BPS = {  # annual rate in basis points by order priority
                     AS BIGINT) AS total_principal_cents,
                CAST(SUM((balance * bps) // 120000) AS BIGINT)
                    AS total_interest_cents,
-               CAST(CAST(SUM((balance * bps) // 120000) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(SUM((balance * bps) // 120000) AS STRING) AS DOUBLE)
                  / CAST(CAST(SUM(CASE WHEN m = 0 THEN principal_cents ELSE 0 END)
-                        AS VARCHAR) AS DOUBLE) AS interest_to_principal
+                        AS STRING) AS DOUBLE) AS interest_to_principal
         FROM sched
         GROUP BY priority
         ORDER BY priority
@@ -2631,7 +2612,7 @@ def fin_bond_convexity_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH monthly AS (
             SELECT c.c_mktsegment AS segment,
-                   CAST(strftime(o.o_orderdate, '%Y-%m') AS VARCHAR) AS ym,
+                   CAST(strftime(o.o_orderdate, '%Y-%m') AS STRING) AS ym,
                    CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
                         AS DECIMAL(18,2)) AS x
             FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -2639,8 +2620,8 @@ def fin_bond_convexity_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ret AS (
             SELECT segment, ym,
-                   CAST(CAST(x AS VARCHAR) AS DOUBLE)
-                     / CAST(CAST(xp AS VARCHAR) AS DOUBLE) AS lnk
+                   CAST(CAST(x AS STRING) AS DOUBLE)
+                     / CAST(CAST(xp AS STRING) AS DOUBLE) AS lnk
             FROM (SELECT segment, ym, x,
                          LAG(x) OVER (PARTITION BY segment ORDER BY ym) AS xp
                   FROM monthly)
@@ -2804,11 +2785,11 @@ def fin_rachev_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT segment,
                    CAST(COUNT(*) AS BIGINT) AS n,
                    sqrt((CAST(CAST(SUM(CAST(r AS DECIMAL(38,0)) * r)
-                              AS VARCHAR) AS DOUBLE)
+                              AS STRING) AS DOUBLE)
                          - CAST(CAST(SUM(CAST(r AS DECIMAL(38,0)))
-                                AS VARCHAR) AS DOUBLE)
+                                AS STRING) AS DOUBLE)
                            * CAST(CAST(SUM(CAST(r AS DECIMAL(38,0)))
-                                  AS VARCHAR) AS DOUBLE) / COUNT(*))
+                                  AS STRING) AS DOUBLE) / COUNT(*))
                         / (COUNT(*) - 1)) / 1e9 AS sigma
             FROM ret GROUP BY segment
         ),
@@ -3070,10 +3051,10 @@ def fin_treynor_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT CAST(y AS BIGINT) AS year,
                CAST(COUNT(xs) AS BIGINT) AS n_segments,
-               CAST(CAST(SUM(num) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(SUM(num) AS STRING) AS DOUBLE)
                  / (CAST(2 AS DOUBLE)
-                    * CAST(CAST(xy AS VARCHAR) AS DOUBLE)
-                    * CAST(CAST(xt AS VARCHAR) AS DOUBLE)) AS active_share
+                    * CAST(CAST(xy AS STRING) AS DOUBLE)
+                    * CAST(CAST(xt AS STRING) AS DOUBLE)) AS active_share
         FROM terms GROUP BY y, xy, xt ORDER BY year
     """,
 )
@@ -3554,27 +3535,27 @@ def fin_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         s AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(CAST(v AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS s1,
-                   CAST(CAST(SUM(CAST(v AS DECIMAL(15,0)) * v) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(v AS DECIMAL(15,0)) * v) AS STRING)
                         AS DOUBLE) AS s2,
                    CAST(CAST(SUM(CAST(CAST(v AS DECIMAL(15,0)) * v
-                                      AS DECIMAL(23,0)) * v) AS VARCHAR)
+                                      AS DECIMAL(23,0)) * v) AS STRING)
                         AS DOUBLE) AS s3,
                    CAST(1e16 AS DOUBLE)
                      * CAST(CAST(SUM(CAST(a*a*a*a AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(4e12 AS DOUBLE)
                      * CAST(CAST(SUM(CAST(a*a*a*b AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(6e8 AS DOUBLE)
                      * CAST(CAST(SUM(CAST((a*b)*(a*b) AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(4e4 AS DOUBLE)
                      * CAST(CAST(SUM(CAST(a*b*b*b AS DECIMAL(28,0)))
-                                 AS VARCHAR) AS DOUBLE)
+                                 AS STRING) AS DOUBLE)
                    + CAST(CAST(SUM(CAST((b*b)*(b*b) AS DECIMAL(28,0)))
-                               AS VARCHAR) AS DOUBLE) AS s4
+                               AS STRING) AS DOUBLE) AS s4
             FROM split
         ),
         m AS (

@@ -880,7 +880,7 @@ def dq_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH arms AS MATERIALIZED (
             SELECT CAST(CAST('0x' || substr(md5('srm0#'
-                       || CAST(c_custkey AS VARCHAR)), 1, 15) AS BIGINT)
+                       || CAST(c_custkey AS STRING)), 1, 15) AS BIGINT)
                        % 4 AS INT) AS arm,
                    CAST(COUNT(*) AS BIGINT) AS n_arm
             FROM customer
@@ -1091,7 +1091,7 @@ _BEN2_SQL_CASE = " ".join(
     oracle=f"""
         WITH digits AS (
             SELECT substr(regexp_replace(
-                       CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR),
+                       CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS STRING),
                        '[^0-9]', '', 'g'), 2, 1) AS d2
             FROM orders
             WHERE o_totalprice >= 10

@@ -248,7 +248,7 @@ def ingest_safe_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT c_custkey,
                md5(concat_ws('#',
-                   coalesce(CAST(c_custkey AS VARCHAR), 'nan'),
+                   coalesce(CAST(c_custkey AS STRING), 'nan'),
                    coalesce(nullif(c_mktsegment, 'BUILDING'), 'nan'),
                    coalesce(c_name, 'nan'))) AS surrogate_key
         FROM customer
@@ -603,7 +603,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT l_returnflag,
                CAST(2 * COUNT(*) AS BIGINT) AS n_rows,
-               CAST(CAST(2 * SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(2 * SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS STRING) AS DOUBLE)
                  AS total_price
         FROM lineitem
         WHERE l_quantity >= 25
@@ -1052,10 +1052,10 @@ _FW_LAYOUT = [
         SELECT account, symbol,
                CAST(CAST(CAST(CAST(quantity_milli AS DECIMAL(18,0))
                     * CAST('0.001' AS DECIMAL(4,3)) AS DECIMAL(18,3))
-                   AS VARCHAR) AS DOUBLE) AS quantity,
+                   AS STRING) AS DOUBLE) AS quantity,
                CAST(CAST(CAST(CAST(price_micro AS DECIMAL(18,0))
                     * CAST('0.0001' AS DECIMAL(5,4)) AS DECIMAL(18,4))
-                   AS VARCHAR) AS DOUBLE) AS price,
+                   AS STRING) AS DOUBLE) AS price,
                as_of
         FROM parsed
         ORDER BY account, symbol
@@ -1249,8 +1249,8 @@ def ingest_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "schema", "dq"),
     oracle=r"""
         WITH raw AS (
-            SELECT CAST(o_orderkey AS VARCHAR) AS c_key,
-                   CAST(o_totalprice AS VARCHAR) AS c_amount,
+            SELECT CAST(o_orderkey AS STRING) AS c_key,
+                   CAST(o_totalprice AS STRING) AS c_amount,
                    strftime(o_orderdate, '%Y-%m-%d') AS c_date,
                    o_orderpriority AS c_text
             FROM orders

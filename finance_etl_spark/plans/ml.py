@@ -211,7 +211,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _NB_TOKENS_SQL = """
-        SELECT doc_id, lang, unnest(list_filter(
+        SELECT doc_id, lang, unnest(filter(
                    string_split(text, ' '), t -> t <> '')) AS tok
         FROM documents
 """
@@ -688,15 +688,15 @@ _STUMP_GAIN = (
     tags=("ml", "tree", "agg"),
     oracle=f"""
         WITH rng AS (
-            SELECT CAST(CAST(MIN(l_extendedprice) AS VARCHAR) AS DOUBLE)
+            SELECT CAST(CAST(MIN(l_extendedprice) AS STRING) AS DOUBLE)
                        AS xmin,
-                   CAST(CAST(MAX(l_extendedprice) AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(MAX(l_extendedprice) AS STRING) AS DOUBLE)
                        AS xmax
             FROM lineitem
         ),
         hist AS (
             SELECT LEAST({_STUMP_BINS - 1},
-                       CAST(FLOOR((CAST(CAST(l_extendedprice AS VARCHAR)
+                       CAST(FLOOR((CAST(CAST(l_extendedprice AS STRING)
                                         AS DOUBLE) - r.xmin)
                            / ((r.xmax - r.xmin)
                               / {float(_STUMP_BINS)})) AS INT)) AS bin,
@@ -1128,7 +1128,7 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ml", "eval", "agg"),
     oracle="""
         WITH scored AS (
-            SELECT LEAST(9, CAST(FLOOR((CAST(CAST(l_quantity AS VARCHAR)
+            SELECT LEAST(9, CAST(FLOOR((CAST(CAST(l_quantity AS STRING)
                        AS DOUBLE) / 50.0) * 10.0) AS INT)) AS bin,
                    CAST(l_quantity AS DECIMAL(20,2)) AS q,
                    CAST(l_returnflag = 'R' AS INT) AS y
@@ -1136,7 +1136,7 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT bin,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(CAST(SUM(q) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(SUM(q) AS STRING) AS DOUBLE)
                  / (50.0 * CAST(COUNT(*) AS DOUBLE)) AS mean_predicted,
                CAST(CAST(SUM(y) AS BIGINT) AS DOUBLE)
                  / CAST(COUNT(*) AS DOUBLE) AS actual_rate
@@ -1276,18 +1276,18 @@ _GB_SSE_AFTER = (
         WITH g AS (
             SELECT CAST(COUNT(*) AS DOUBLE) AS g_n_d,
                    CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,2)))
-                        AS VARCHAR) AS DOUBLE) AS g_sum_d
+                        AS STRING) AS DOUBLE) AS g_sum_d
             FROM lineitem
         ),
         grp AS (
             SELECT l_quantity AS threshold,
                    CAST(COUNT(*) AS BIGINT) AS n,
                    SUM(CAST(FLOOR((CAST(CAST(l_extendedprice
-                       AS VARCHAR) AS DOUBLE) - {_GB_F0}) * 1e4)
+                       AS STRING) AS DOUBLE) - {_GB_F0}) * 1e4)
                        AS DECIMAL(38,0))) AS sr_raw,
                    SUM(CAST(FLOOR((CAST(CAST(l_extendedprice
-                       AS VARCHAR) AS DOUBLE) - {_GB_F0})
-                       * (CAST(CAST(l_extendedprice AS VARCHAR) AS DOUBLE)
+                       AS STRING) AS DOUBLE) - {_GB_F0})
+                       * (CAST(CAST(l_extendedprice AS STRING) AS DOUBLE)
                           - {_GB_F0}) * 1e4)
                        AS DECIMAL(38,0))) AS sr2_raw
             FROM lineitem CROSS JOIN g
@@ -1298,12 +1298,12 @@ _GB_SSE_AFTER = (
             -- the double presentation happens per output row
             SELECT threshold,
                    CAST(SUM(n) OVER w AS BIGINT) AS cum_n,
-                   CAST(CAST(SUM(sr_raw) OVER w AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr_raw) OVER w AS STRING) AS DOUBLE)
                        / 1e4 AS cum_r,
                    CAST(SUM(n) OVER () AS BIGINT) AS tot_n,
-                   CAST(CAST(SUM(sr_raw) OVER () AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr_raw) OVER () AS STRING) AS DOUBLE)
                        / 1e4 AS tot_r,
-                   CAST(CAST(SUM(sr2_raw) OVER () AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr2_raw) OVER () AS STRING) AS DOUBLE)
                        / 1e4 AS tot_r2
             FROM grp
             WINDOW w AS (ORDER BY threshold
@@ -1456,7 +1456,7 @@ _CHI2 = (
     oracle=f"""
         WITH dt AS MATERIALIZED (
             SELECT DISTINCT doc_id, lang,
-                   unnest(list_filter(string_split(text, ' '),
+                   unnest(filter(string_split(text, ' '),
                                       t -> t <> '')) AS tok
             FROM documents
         ),
@@ -1590,7 +1590,7 @@ _SPRT_B = "CAST(ln(CAST(0.05 AS DOUBLE) / CAST(0.95 AS DOUBLE)) AS DECIMAL(12,6)
                     ELSE 'continue' END AS decision,
                COALESCE(c.n_trials, l.n_trials) AS n_trials,
                COALESCE(c.n_success, l.n_success) AS n_success,
-               CAST(CAST(COALESCE(c.llr, l.llr) AS VARCHAR) AS DOUBLE)
+               CAST(CAST(COALESCE(c.llr, l.llr) AS STRING) AS DOUBLE)
                    AS llr
         FROM latest l LEFT JOIN crossing c ON TRUE
     """,
@@ -1872,7 +1872,7 @@ def _gb2_r2(y: str) -> str:
     )
 
 
-_GB2_Y_DUCK = "CAST(CAST(l_extendedprice AS VARCHAR) AS DOUBLE)"
+_GB2_Y_DUCK = "CAST(CAST(l_extendedprice AS STRING) AS DOUBLE)"
 _GB2_Y_SPARK = "CAST(l_extendedprice AS DOUBLE)"
 
 
@@ -1883,7 +1883,7 @@ _GB2_Y_SPARK = "CAST(l_extendedprice AS DOUBLE)"
         WITH g AS (
             SELECT CAST(COUNT(*) AS DOUBLE) AS g_n_d,
                    CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,2)))
-                        AS VARCHAR) AS DOUBLE) AS g_sum_d
+                        AS STRING) AS DOUBLE) AS g_sum_d
             FROM lineitem
         ),
         grp1 AS (
@@ -1900,12 +1900,12 @@ _GB2_Y_SPARK = "CAST(l_extendedprice AS DOUBLE)"
         cum1 AS (
             SELECT threshold,
                    CAST(SUM(n) OVER w AS BIGINT) AS cum_n,
-                   CAST(CAST(SUM(sr_raw) OVER w AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr_raw) OVER w AS STRING) AS DOUBLE)
                        / 1e4 AS cum_r,
                    CAST(SUM(n) OVER () AS BIGINT) AS tot_n,
-                   CAST(CAST(SUM(sr_raw) OVER () AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr_raw) OVER () AS STRING) AS DOUBLE)
                        / 1e4 AS tot_r,
-                   CAST(CAST(SUM(sr2_raw) OVER () AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr2_raw) OVER () AS STRING) AS DOUBLE)
                        / 1e4 AS tot_r2
             FROM grp1
             WINDOW w AS (ORDER BY threshold
@@ -1942,12 +1942,12 @@ _GB2_Y_SPARK = "CAST(l_extendedprice AS DOUBLE)"
         cum2 AS (
             SELECT f, thr,
                    CAST(SUM(n) OVER w AS BIGINT) AS cum_n,
-                   CAST(CAST(SUM(sr_raw) OVER w AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr_raw) OVER w AS STRING) AS DOUBLE)
                        / 1e4 AS cum_r,
                    CAST(SUM(n) OVER p AS BIGINT) AS tot_n,
-                   CAST(CAST(SUM(sr_raw) OVER p AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr_raw) OVER p AS STRING) AS DOUBLE)
                        / 1e4 AS tot_r,
-                   CAST(CAST(SUM(sr2_raw) OVER p AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(sr2_raw) OVER p AS STRING) AS DOUBLE)
                        / 1e4 AS tot_r2
             FROM grp2
             WINDOW w AS (PARTITION BY f ORDER BY thr
@@ -2401,7 +2401,7 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH lab AS (
             SELECT LEAST(CAST(FLOOR(o_totalprice / 60000) AS BIGINT), 9)
                        AS bin,
-                   CASE WHEN substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1)
+                   CASE WHEN substr(md5(CAST(o_orderkey AS STRING)), 1, 1)
                              < '8' THEN 1 ELSE 0 END AS is_ref
             FROM orders
         ),
@@ -2434,7 +2434,7 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(diffnum * lnq6 AS DOUBLE)
                  / CAST((tr + 10) * (tc + 10) AS DOUBLE) / 1e6 AS psi_term,
                CAST(CAST(SUM(CAST(diffnum * lnq6 AS DECIMAL(38,0)))
-                         OVER () AS VARCHAR) AS DOUBLE)
+                         OVER () AS STRING) AS DOUBLE)
                  / CAST((tr + 10) * (tc + 10) AS DOUBLE) / 1e6 AS psi_total
         FROM terms
         ORDER BY bin
@@ -2613,7 +2613,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ml", "eval", "agg"),
     oracle="""
         WITH scored AS (
-            SELECT LEAST(9, CAST(FLOOR((CAST(CAST(l_quantity AS VARCHAR)
+            SELECT LEAST(9, CAST(FLOOR((CAST(CAST(l_quantity AS STRING)
                        AS DOUBLE) / 50.0) * 10.0) AS INT)) AS bin,
                    CAST(l_returnflag = 'R' AS INT) AS y
             FROM lineitem
@@ -3063,7 +3063,7 @@ def ml_multiclass_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Permutation-importance base: predict extendedprice (cents) from
 # quantity and discount (scaled ints) on lineitem, keyed uniquely by
 # (orderkey, linenumber).
-_PI_KEY = "CAST(l_orderkey AS VARCHAR) || '#' || CAST(l_linenumber AS VARCHAR)"
+_PI_KEY = "CAST(l_orderkey AS STRING) || '#' || CAST(l_linenumber AS STRING)"
 
 
 def _pi_r2_sql(xcol: str) -> str:
@@ -3071,18 +3071,18 @@ def _pi_r2_sql(xcol: str) -> str:
     shared shape for the baseline and permuted fits (DuckDB side)."""
     return f"""
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(CAST(SUM(CAST(y AS DECIMAL(38,0))) AS VARCHAR)
+               CAST(CAST(SUM(CAST(y AS DECIMAL(38,0))) AS STRING)
                     AS DOUBLE) AS sy,
-               CAST(CAST(SUM(CAST({xcol} AS DECIMAL(38,0))) AS VARCHAR)
+               CAST(CAST(SUM(CAST({xcol} AS DECIMAL(38,0))) AS STRING)
                     AS DOUBLE) AS sx,
                CAST(CAST(SUM(CAST(y AS DECIMAL(19,0))
-                    * CAST(y AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE)
+                    * CAST(y AS DECIMAL(19,0))) AS STRING) AS DOUBLE)
                    AS syy,
                CAST(CAST(SUM(CAST({xcol} AS DECIMAL(19,0))
-                    * CAST({xcol} AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE)
+                    * CAST({xcol} AS DECIMAL(19,0))) AS STRING) AS DOUBLE)
                    AS sxx,
                CAST(CAST(SUM(CAST(y AS DECIMAL(19,0))
-                    * CAST({xcol} AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE)
+                    * CAST({xcol} AS DECIMAL(19,0))) AS STRING) AS DOUBLE)
                    AS sxy
     """
 
@@ -3401,11 +3401,11 @@ def ml_shapley_2feature(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         tr AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(x*x) AS VARCHAR) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(y) AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(x*x) AS STRING) AS DOUBLE) AS sxx,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(21,2)) * y)
-                        AS VARCHAR) AS DOUBLE) AS sxy
+                        AS STRING) AS DOUBLE) AS sxy
             FROM lab WHERE fold = 0
         ),
         beta AS (
@@ -3420,9 +3420,9 @@ def ml_shapley_2feature(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         cal AS (
             SELECT CAST(FLOOR(abs(
-                       CAST(CAST(l.y AS VARCHAR) AS DOUBLE)
+                       CAST(CAST(l.y AS STRING) AS DOUBLE)
                        - b.b0
-                       - b.b1 * CAST(CAST(l.x AS VARCHAR) AS DOUBLE)
+                       - b.b1 * CAST(CAST(l.x AS STRING) AS DOUBLE)
                    ) * 1e6) AS BIGINT) AS r_q6
             FROM lab l CROSS JOIN beta b WHERE l.fold = 1
         ),
@@ -3623,7 +3623,7 @@ def ml_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH per_cust AS (
             SELECT o_custkey AS cust,
-                   CAST('0x' || substr(md5('arm:' || CAST(o_custkey AS VARCHAR)),
+                   CAST('0x' || substr(md5('arm:' || CAST(o_custkey AS STRING)),
                         1, 15) AS BIGINT) % 2 AS arm,
                    CAST(SUM(CASE WHEN o_orderdate < TIMESTAMP '1996-01-01'
                         THEN CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
@@ -3638,11 +3638,11 @@ def ml_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(x) AS BIGINT) AS sx,
                    CAST(SUM(y) AS BIGINT) AS sy,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(19,0)) * x)
-                        AS VARCHAR) AS DOUBLE) AS sxx,
+                        AS STRING) AS DOUBLE) AS sxx,
                    CAST(CAST(SUM(CAST(x AS DECIMAL(19,0)) * y)
-                        AS VARCHAR) AS DOUBLE) AS sxy,
+                        AS STRING) AS DOUBLE) AS sxy,
                    CAST(CAST(SUM(CAST(y AS DECIMAL(19,0)) * y)
-                        AS VARCHAR) AS DOUBLE) AS syy
+                        AS STRING) AS DOUBLE) AS syy
             FROM per_cust
         ),
         theta AS (
@@ -3985,7 +3985,7 @@ def ml_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         bins AS (
             SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_b,
-                   CAST(CAST(SUM(q) AS VARCHAR) AS DOUBLE) / 50 AS sp,
+                   CAST(CAST(SUM(q) AS STRING) AS DOUBLE) / 50 AS sp,
                    CAST(SUM(y) AS BIGINT) AS k
             FROM scored GROUP BY bin
         ),
@@ -4599,7 +4599,7 @@ def ml_ols_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH lab AS (
             SELECT CAST('0x' || substr(md5('arm:'
-                       || CAST(o_orderkey AS VARCHAR)), 1, 15) AS BIGINT)
+                       || CAST(o_orderkey AS STRING)), 1, 15) AS BIGINT)
                        % 2 AS arm,
                    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
                        AS v,
@@ -4759,7 +4759,7 @@ def ml_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH lab AS (
             SELECT c.c_mktsegment AS stratum,
                    CAST('0x' || substr(md5('arm:'
-                        || CAST(o.o_orderkey AS VARCHAR)), 1, 15) AS BIGINT)
+                        || CAST(o.o_orderkey AS STRING)), 1, 15) AS BIGINT)
                        % 2 AS arm,
                    CAST(CAST(o.o_totalprice AS DECIMAL(12,2)) * 100
                         AS BIGINT) AS yc
@@ -5196,7 +5196,7 @@ def ml_delong_auc_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ml", "eval", "agg"),
     oracle=f"""
         WITH scored AS (
-            SELECT LEAST(9, CAST(FLOOR((CAST(CAST(l_quantity AS VARCHAR)
+            SELECT LEAST(9, CAST(FLOOR((CAST(CAST(l_quantity AS STRING)
                        AS DOUBLE) / 50.0) * 10.0) AS INT)) AS bin,
                    CAST(l_quantity AS DECIMAL(20,2)) AS q,
                    CAST(l_returnflag = 'R' AS INT) AS y
@@ -5205,7 +5205,7 @@ def ml_delong_auc_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         bins AS (
             SELECT bin, CAST(COUNT(*) AS BIGINT) AS nb,
                    CAST(SUM(y) AS BIGINT) AS yb,
-                   CAST(CAST(SUM(q) AS VARCHAR) AS DOUBLE) / 50.0 AS fq
+                   CAST(CAST(SUM(q) AS STRING) AS DOUBLE) / 50.0 AS fq
             FROM scored GROUP BY bin
         ),
         tot AS (
@@ -6721,7 +6721,7 @@ def ml_average_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH gated AS (
             SELECT o_orderpriority AS class,
                    CASE WHEN CAST('0x' || SUBSTRING(
-                            md5(CAST(o_orderkey AS VARCHAR)), 1, 4) AS BIGINT)
+                            md5(CAST(o_orderkey AS STRING)), 1, 4) AS BIGINT)
                         < 52429 THEN 1 ELSE 0 END AS is_train
             FROM orders
         ),

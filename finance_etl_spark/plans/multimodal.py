@@ -320,8 +320,8 @@ def _audio_frames(d: DataFrame) -> DataFrame:
             FROM embeddings
         )
         SELECT d.doc_id, d.lang, d.source, d.n_chars,
-               len(string_split(d.text, ' ')) -
-                 len(list_filter(string_split(d.text, ' '), t -> t = ''))
+               array_length(string_split(d.text, ' ')) -
+                 array_length(filter(string_split(d.text, ' '), t -> t = ''))
                  AS n_tokens,
                n.label, n.l2
         FROM documents d JOIN norms n ON d.doc_id = n.vec_id
@@ -362,7 +362,7 @@ _BLOB_REPEAT = 64
     oracle=f"""
         WITH blobs AS (
             SELECT o_orderkey AS blob_id,
-                   repeat(md5(CAST(o_orderkey AS VARCHAR)), {_BLOB_REPEAT})
+                   repeat(md5(CAST(o_orderkey AS STRING)), {_BLOB_REPEAT})
                      AS payload
             FROM orders WHERE o_orderkey < 20
         ),
@@ -740,10 +740,10 @@ def mm_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         sigs AS (
             SELECT doc_id, n_frames, frame_idx,
-                   (ascii(substr(md5(CAST(doc_id AS VARCHAR) || '#'
-                        || CAST(frame_idx AS VARCHAR)), 1, 1)) * 7
-                    + ascii(substr(md5(CAST(doc_id AS VARCHAR) || '#'
-                        || CAST(frame_idx AS VARCHAR)), 2, 1))) % 256
+                   (ascii(substr(md5(CAST(doc_id AS STRING) || '#'
+                        || CAST(frame_idx AS STRING)), 1, 1)) * 7
+                    + ascii(substr(md5(CAST(doc_id AS STRING) || '#'
+                        || CAST(frame_idx AS STRING)), 2, 1))) % 256
                        AS luma
             FROM frames
         ),

@@ -64,7 +64,10 @@ the headline set too). Keep a DataFrame builder only where it exercises
 a Spark-only path (operators, UDFs, streams, sinks), where a plan-shape
 pin fails on the text, or where the text is slower at sf0.1 or scales
 worse (a ``NOT IN`` subquery inside an aggregate plans as a null-aware
-nested-loop join; a pairwise ``a.x > b.x`` join is quadratic; an
+nested-loop join; a pairwise ``a.x > b.x`` join is quadratic; a running
+sum over one unpartitioned window runs in one task, ts_max_concurrency;
+a median by row_number over a handful of partitions sorts every row,
+text_dataset_card; an
 oracle's decimal sums lose the builder's long-cents fast path in
 q1_pricing_summary and ml_ols_normal_equations).
 
@@ -86,6 +89,47 @@ Spellings both engines parse, for DuckDB-only ones:
 - ``WITH x AS MATERIALIZED (...)`` stays: run_sql drops the hint before
   Spark parses the text, and DuckDB can need it (graph_triangle_count:
   0.042 s at sf0.01 with it, 1.58 s without, out of memory at sf0.1)
+- ``filter(l, x -> ...)`` for ``list_filter`` (DuckDB's alias), and
+  ``array_length(l)`` for a list's ``len(l)``; ``len`` of a string stays
+  ``len`` (both engines' string length)
+- ``regexp_extract_all(s, p, 0)``: Spark's defaults to group 1 and
+  DuckDB's to group 0, so a pattern without a group raises
+  INVALID_PARAMETER_VALUE.REGEX_GROUP_INDEX on Spark
+
+DuckDB functions Spark lacks are ``SQL_FUNCTIONS``: Spark SQL functions
+under DuckDB's names, which run_sql creates for the text that calls them
+(a text that calls none pays nothing). The optimizer inlines each call,
+so ``list_sum(array(id, id))`` plans as a bare ``aggregate(...)``.
+
+- list_sum: ``aggregate`` skipping NULLs, NULL for an empty list
+- array_length: ``array_size``
+- isodow: ``weekday(d) + 1`` (Monday 1 .. Sunday 7)
+- sha256: ``sha2(b, 256)``
+- string_split: ``split`` on the separator with each regex
+  metacharacter escaped, so a one-character separator keeps Java's
+  no-regex split (``\\Q..\\E`` quoting cost 45 % more on a 3M-row split)
+- regexp_split_to_array: ``split``
+- array_to_string: ``array_join``, NULL when no element is non-NULL
+- list_sort: ``array_sort`` (NULLs last)
+- json_extract_string: ``get_json_object``
+- strftime: ``date_format``, for ``%Y %m %d %H %M %S`` only
+- to_minutes: ``make_dt_interval(0, 0, n)``
+- epoch_us: ``unix_micros``
+
+tests/test_recipes.py::test_sql_function_matches_duckdb_builtin runs each
+against DuckDB's built-in over NULLs, empty lists and strings, regex
+metacharacters as separators and every strftime pattern an oracle uses.
+Traps of the typed parameters:
+- A parameter casts its argument: ``list_sum`` returns DOUBLE for an
+  integer list, where DuckDB returns HUGEINT; ``list_sort`` takes
+  ARRAY<DOUBLE>, so a list of strings fails the cast (CAST_INVALID_INPUT)
+  instead of sorting; ``array_length`` and ``array_to_string`` cast the
+  list to ARRAY<STRING> (a double renders in Java's spelling).
+- ``len`` is Spark's string length, and a temporary function cannot
+  shadow a built-in (ROUTINE_ALREADY_EXISTS), hence ``array_length``.
+- DuckDB's ``string_split`` with a NULL separator returns the whole
+  string as one element; the function returns NULL. Every oracle's
+  separator is a literal.
 
 Dialect traps, each measured on this registry:
 - ``dayofweek`` is 0-based (Sunday) in DuckDB and 1-based in Spark
@@ -100,6 +144,12 @@ Dialect traps, each measured on this registry:
   the first match; Spark's replaces all.
 - DuckDB casts a ``'0x...'`` string to BIGINT; Spark refuses it
   (cur_epoch_sample, ml_uplift_qini).
+- DuckDB's ``regexp_replace(s, p, r, 'g')`` option is Spark's position
+  argument (CAST_INVALID_INPUT for 'g'; cur_pii_redact).
+- A backslash in a Spark SQL string literal starts an escape: ``'\\s'``
+  reads as ``'s'`` (DuckDB keeps the backslash), so a regex ``\\s``,
+  ``\\d`` or ``\\w`` means another thing on Spark; list the characters
+  instead (text_token_count's ``[^a-zA-Z0-9_\\s]`` returns other rows).
 - ``IGNORE NULLS`` goes inside the call in DuckDB
   (``last_value(x IGNORE NULLS)``) and after it in Spark
   (``last_value(x) IGNORE NULLS``); each parser refuses the other's
@@ -186,13 +236,56 @@ def spark_text(oracle: str) -> str:
     return _MATERIALIZED.sub("AS (", oracle)
 
 
+# DuckDB functions Spark lacks, as Spark SQL functions under DuckDB's
+# names: name -> "(params) RETURNS type RETURN expr". The optimizer
+# inlines each call into the plain expression.
+SQL_FUNCTIONS = {
+    "list_sum": "(a ARRAY<DOUBLE>) RETURNS DOUBLE RETURN aggregate(a,"
+    " CAST(NULL AS DOUBLE),"
+    " (s, x) -> CASE WHEN x IS NULL THEN s ELSE coalesce(s, 0D) + x END)",
+    "array_length": "(a ARRAY<STRING>) RETURNS BIGINT RETURN array_size(a)",
+    "isodow": "(d DATE) RETURNS BIGINT RETURN weekday(d) + 1",
+    "sha256": "(b BINARY) RETURNS STRING RETURN sha2(b, 256)",
+    # each regex metacharacter of the separator behind a backslash: a
+    # one-character separator then takes Java's no-regex split path
+    "string_split": "(s STRING, sep STRING) RETURNS ARRAY<STRING> RETURN split(s,"
+    r" regexp_replace(sep, '([\\\\^$.|?*+()\\[\\]{}])', '\\\\$1'))",
+    "regexp_split_to_array": "(s STRING, p STRING) RETURNS ARRAY<STRING>"
+    " RETURN split(s, p)",
+    # DuckDB gives NULL for a list with no non-NULL element
+    "array_to_string": "(a ARRAY<STRING>, sep STRING) RETURNS STRING"
+    " RETURN CASE WHEN exists(a, x -> x IS NOT NULL) THEN array_join(a, sep) END",
+    "list_sort": "(a ARRAY<DOUBLE>) RETURNS ARRAY<DOUBLE> RETURN array_sort(a)",
+    "json_extract_string": "(j STRING, path STRING) RETURNS STRING"
+    " RETURN get_json_object(j, path)",
+    "strftime": "(ts TIMESTAMP, fmt STRING) RETURNS STRING RETURN date_format(ts,"
+    " replace(replace(replace(replace(replace(replace(fmt,"
+    " '%Y', 'yyyy'), '%m', 'MM'), '%d', 'dd'), '%H', 'HH'), '%M', 'mm'),"
+    " '%S', 'ss'))",
+    "to_minutes": "(n BIGINT) RETURNS INTERVAL DAY TO SECOND"
+    " RETURN make_dt_interval(0, 0, n)",
+    "epoch_us": "(ts TIMESTAMP) RETURNS BIGINT RETURN unix_micros(ts)",
+}
+_CALLS = {f: re.compile(rf"\b{f}\s*\(", re.IGNORECASE) for f in SQL_FUNCTIONS}
+
+
+def register_functions(spark: SparkSession, text: str) -> None:
+    """Create the ``SQL_FUNCTIONS`` that ``text`` calls as temporary
+    functions of this session (replaced per call, like the views)."""
+    for name, body in SQL_FUNCTIONS.items():
+        if _CALLS[name].search(text):
+            spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")
+
+
 def run_sql(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Build query ``name`` from its registered oracle text: the one
     string both engines parse runs on Spark over ``load_table`` views of
-    the tables it names (temp views of this session, replaced per call)."""
+    the tables it names and the ``SQL_FUNCTIONS`` it calls (temp views
+    and functions of this session, replaced per call)."""
     text = spark_text(_REGISTRY[name].oracle)
     named = tuple(t for t in TABLES if re.search(rf"\b{t}\b", text))
     register_views(spark, sf_dir, named)
+    register_functions(spark, text)
     return spark.sql(text)
 
 

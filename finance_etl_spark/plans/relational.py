@@ -509,23 +509,7 @@ def window_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_lag_lead_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue deltas via lag/lead."""
-    o = load_table(spark, sf_dir, "orders")
-    m = o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("ym")).agg(
-        dsum("o_totalprice").alias("revenue")
-    )
-    # global window is over the month-grain AGGREGATE (one row per
-    # calendar month — bounded by the date span, not by data volume),
-    # so the single-partition sort sees ~tens of rows at any SF
-    w = Window.orderBy("ym")
-    return m.select(
-        "ym",
-        "revenue",
-        F.lag("revenue").over(w).alias("prev_revenue"),
-        F.lead("revenue").over(w).alias("next_revenue"),
-        (F.col("revenue") - F.coalesce(F.lag("revenue").over(w), F.lit(0.0))).alias(
-            "mom_delta"
-        ),
-    )
+    return run_sql(spark, sf_dir, "window_lag_lead_mom")
 
 
 @register(
@@ -1303,7 +1287,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE) AS o_orderdate,
                CAST(COUNT(*) OVER w AS BIGINT) AS n_last_30d,
                CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) OVER w
-                    AS VARCHAR) AS DOUBLE) AS spend_last_30d
+                    AS STRING) AS DOUBLE) AS spend_last_30d
         FROM orders
         WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
                      RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
@@ -1539,23 +1523,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan), the CASE folds into the partial aggregate so the shuffle
     carries one row per month, and the final share is one IEEE-exact
     double division of two decimal-exact sums."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    promo = dsum(promo_rev)
-    total = dsum(rev)
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
-        .agg(
-            promo.alias("promo_revenue"),
-            total.alias("total_revenue"),
-            (promo / total).alias("promo_frac"),
-        )
-    )
+    return run_sql(spark, sf_dir, "q14_promo_revenue")
 
 
 @register(
@@ -1643,7 +1611,7 @@ def agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT n_name, nation_revenue,
                nation_revenue /
                CAST(CAST(SUM(CAST(nation_revenue AS DECIMAL(30,10))) OVER ()
-                    AS VARCHAR) AS DOUBLE) AS revenue_share
+                    AS STRING) AS DOUBLE) AS revenue_share
         FROM a
     """,
 )
@@ -1858,16 +1826,7 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     to date). One hash-partitioned window, no self-join, no
     per-row set materialization; the workaround is exact, not an
     approximation."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.date_format("o_orderdate", "yyyy-MM")
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.col("o_orderdate").cast("date").alias("d"),
-        F.dense_rank().over(w).cast("long").alias("distinct_months_so_far"),
-    )
+    return run_sql(spark, sf_dir, "window_running_distinct")
 
 
 @register(
@@ -2300,7 +2259,7 @@ def agg_skew_kurtosis_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
                COUNT(*) FILTER (WHERE l_tax = 0) AS n_tax_free,
                CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10)))
-                    FILTER (WHERE l_returnflag = 'R') AS VARCHAR) AS DOUBLE)
+                    FILTER (WHERE l_returnflag = 'R') AS STRING) AS DOUBLE)
                  AS returned_revenue
         FROM lineitem GROUP BY l_returnflag
     """,
@@ -2473,7 +2432,7 @@ def agg_kmv_intersection_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH assign AS MATERIALIZED (
             SELECT DISTINCT user_id,
                    CASE WHEN (strpos('0123456789abcdef',
-                              substr(md5(CAST(user_id AS VARCHAR)), 32, 1)) - 1)
+                              substr(md5(CAST(user_id AS STRING)), 32, 1)) - 1)
                              % 2 = 0
                         THEN 'A' ELSE 'B' END AS arm
             FROM events
@@ -2675,7 +2634,7 @@ def window_trailing_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT l_returnflag,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)))
-                    AS DECIMAL(20,2)) AS VARCHAR) AS DOUBLE) AS sum_qty
+                    AS DECIMAL(20,2)) AS STRING) AS DOUBLE) AS sum_qty
         FROM lineitem
         GROUP BY l_returnflag
         ORDER BY l_returnflag
@@ -2986,8 +2945,8 @@ def dq_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         rs AS (SELECT unnest(generate_series(0, 3)) AS r),
         sketch AS (
             SELECT r,
-                   CAST('0x' || substr(md5(CAST(r AS VARCHAR) || ':'
-                        || CAST(k AS VARCHAR)), 1, 15) AS BIGINT) % 512
+                   CAST('0x' || substr(md5(CAST(r AS STRING) || ':'
+                        || CAST(k AS STRING)), 1, 15) AS BIGINT) % 512
                        AS bucket,
                    CAST(SUM(n) AS BIGINT) AS cnt
             FROM kc CROSS JOIN rs
@@ -2998,8 +2957,8 @@ def dq_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         probes AS (
             SELECT t.k, t.n, r.r,
-                   CAST('0x' || substr(md5(CAST(r.r AS VARCHAR) || ':'
-                        || CAST(t.k AS VARCHAR)), 1, 15) AS BIGINT) % 512
+                   CAST('0x' || substr(md5(CAST(r.r AS STRING) || ':'
+                        || CAST(t.k AS STRING)), 1, 15) AS BIGINT) % 512
                        AS bucket
             FROM top5 t CROSS JOIN rs r
         )
@@ -3077,7 +3036,7 @@ def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH hk AS (
             SELECT DISTINCT o_orderstatus AS g,
-                   CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)),
+                   CAST('0x' || substr(md5(CAST(o_custkey AS STRING)),
                         1, 15) AS BIGINT) AS h
             FROM orders
         ),
@@ -3180,9 +3139,9 @@ _HLL_CZ = {"1": 3, "2": 2, "3": 2, "4": 1, "5": 1, "6": 1, "7": 1}
         ),
         hashed AS (
             SELECT g,
-                   CAST('0x' || substr(md5('b:' || CAST(k AS VARCHAR)),
+                   CAST('0x' || substr(md5('b:' || CAST(k AS STRING)),
                         1, 15) AS BIGINT) % 256 AS bucket,
-                   substr(md5('r:' || CAST(k AS VARCHAR)), 1, 15) AS hr
+                   substr(md5('r:' || CAST(k AS STRING)), 1, 15) AS hr
             FROM hk
         ),
         rho AS (
@@ -3213,7 +3172,7 @@ _HLL_CZ = {"1": 3, "2": 2, "3": 2, "4": 1, "5": 1, "6": 1, "7": 1}
         red AS (
             SELECT g,
                    CAST(CAST(SUM(CAST(1::BIGINT << (60 - m)
-                        AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS s_d,
+                        AS DECIMAL(38,0))) AS STRING) AS DOUBLE) AS s_d,
                    CAST(SUM(CASE WHEN m = 0 THEN 1 ELSE 0 END)
                         AS BIGINT) AS v_empty
             FROM regs GROUP BY g
@@ -3357,15 +3316,15 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         rs AS (SELECT unnest(generate_series(0, 2)) AS r),
         bits AS MATERIALIZED (
             SELECT DISTINCT
-                   CAST('0x' || substr(md5(CAST(r AS VARCHAR) || ':'
-                        || CAST(k AS VARCHAR)), 1, 15) AS BIGINT) % 2048
+                   CAST('0x' || substr(md5(CAST(r AS STRING) || ':'
+                        || CAST(k AS STRING)), 1, 15) AS BIGINT) % 2048
                        AS pos
             FROM buyers CROSS JOIN rs
         ),
         probes AS (
             SELECT c.c_custkey AS k, r.r,
-                   CAST('0x' || substr(md5(CAST(r.r AS VARCHAR) || ':'
-                        || CAST(c.c_custkey AS VARCHAR)), 1, 15) AS BIGINT)
+                   CAST('0x' || substr(md5(CAST(r.r AS STRING) || ':'
+                        || CAST(c.c_custkey AS STRING)), 1, 15) AS BIGINT)
                        % 2048 AS pos
             FROM customer c CROSS JOIN rs r
         ),
@@ -3649,8 +3608,8 @@ def agg_decayed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         rs AS (SELECT unnest(generate_series(0, 15)) AS j),
         xs AS (
             SELECT j,
-                   CAST(SUM((CAST('0x' || substr(md5(CAST(j AS VARCHAR)
-                        || ':' || CAST(k AS VARCHAR)), 1, 15) AS BIGINT)
+                   CAST(SUM((CAST('0x' || substr(md5(CAST(j AS STRING)
+                        || ':' || CAST(k AS STRING)), 1, 15) AS BIGINT)
                         % 2 * 2 - 1) * n) AS BIGINT) AS x
             FROM kc CROSS JOIN rs
             GROUP BY j
@@ -3662,12 +3621,12 @@ def agg_decayed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM xs GROUP BY 1
         ),
         med AS (
-            SELECT list(CAST(CAST(gsum AS VARCHAR) AS DOUBLE)
+            SELECT list(CAST(CAST(gsum AS STRING) AS DOUBLE)
                         ORDER BY gsum) AS l
             FROM gs
         ),
         exact AS (
-            SELECT CAST(CAST(SUM(CAST(n AS DECIMAL(19,0)) * n) AS VARCHAR)
+            SELECT CAST(CAST(SUM(CAST(n AS DECIMAL(19,0)) * n) AS STRING)
                         AS DOUBLE) AS f2
             FROM kc
         )
@@ -3761,7 +3720,7 @@ def agg_ams_f2_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
                o_custkey,
                o_orderkey AS latest_orderkey,
                CAST(o_orderdate AS DATE) AS latest_orderdate,
-               CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR)
+               CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS STRING)
                     AS DOUBLE) AS latest_total
         FROM orders
         ORDER BY o_custkey, o_orderdate DESC, o_orderkey
@@ -4002,7 +3961,7 @@ def sql_values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(COUNT(*) AS BIGINT) AS n_dominating,
                CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
                CAST(CAST(MAX(CAST(o_totalprice AS DECIMAL(12,2)))
-                    AS VARCHAR) AS DOUBLE) AS max_price
+                    AS STRING) AS DOUBLE) AS max_price
         FROM orders
         WHERE EXTRACT(year FROM CAST(o_orderdate AS DATE)) = 1998
           AND o_totalprice > ALL (
@@ -4113,7 +4072,7 @@ def window_dist_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         w2 AS (
             SELECT event_type, d, v, l, list_sort(l)[4] AS med
-            FROM w1 WHERE len(l) = 7
+            FROM w1 WHERE array_length(l) = 7
         ),
         w3 AS (
             SELECT event_type, d, v, med,

@@ -166,7 +166,7 @@ def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT c_custkey,
                md5(c_name) AS name_md5,
                sha256(c_name) AS name_sha256,
-               md5(concat(CAST(c_custkey AS VARCHAR), '#', c_mktsegment)) AS composite_md5
+               md5(concat(CAST(c_custkey AS STRING), '#', c_mktsegment)) AS composite_md5
         FROM customer WHERE c_custkey <= 100
     """,
 )
@@ -196,11 +196,7 @@ def scalar_hash_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON field extraction from a string column + aggregation."""
-    e = load_table(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.sum(F.get_json_object("props", "$.k").cast("bigint")).alias("sum_k"),
-        F.count(F.lit(1)).alias("n"),
-    )
+    return run_sql(spark, sf_dir, "json_extract_events")
 
 
 @register(
@@ -223,17 +219,17 @@ def json_schema_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar", "array", "map"),
     oracle="""
         SELECT vec_id,
-               len(embedding) AS n_dims,
+               array_length(embedding) AS n_dims,
                CAST(embedding[1] AS DOUBLE) AS first_val,
                CAST(embedding[64] AS DOUBLE) AS last_val,
                '[' || array_to_string(list_transform(embedding[1:4],
                    x -> CAST(CAST(CAST(x AS DOUBLE) AS DECIMAL(20,10))
-                             AS VARCHAR)), ',') || ']' AS head4,
+                             AS STRING)), ',') || ']' AS head4,
                '[' || array_to_string(list_transform(list_sort(embedding[1:4]),
                    x -> CAST(CAST(CAST(x AS DOUBLE) AS DECIMAL(20,10))
-                             AS VARCHAR)), ',') || ']' AS head4_sorted,
+                             AS STRING)), ',') || ']' AS head4_sorted,
                CAST(list_max(embedding) AS DOUBLE) AS max_val,
-               len(list_filter(embedding, x -> x > 0)) AS n_positive,
+               array_length(filter(embedding, x -> x > 0)) AS n_positive,
                (CASE label WHEN 0 THEN 'cluster-a' WHEN 1 THEN 'cluster-b' END)
                    AS label_name
         FROM embeddings
@@ -369,7 +365,7 @@ def scalar_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH per_doc AS (
             SELECT doc_id, source,
-                   len(list_filter(string_split(text, ' '),
+                   array_length(filter(string_split(text, ' '),
                                    t -> length(t) >= 9)) AS n_long
             FROM documents
         )
@@ -411,12 +407,12 @@ def array_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT n_nationkey,
                split_part(n_name, '_', 1) AS prefix,
                split_part(n_name, '_', 2) AS num_part,
-               lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS padded_key,
+               lpad(CAST(n_nationkey AS STRING), 4, '0') AS padded_key,
                translate(n_name, '_', '-') AS dashed,
                reverse(n_name) AS reversed,
                repeat('*', CAST(n_regionkey AS INT) + 1) AS stars,
                CAST(strpos(n_name, '_') AS INT) AS underscore_at,
-               CAST(length(regexp_extract_all(n_name, '[0-9]+')[1])
+               CAST(length(regexp_extract_all(n_name, '[0-9]+', 0)[1])
                     AS INT) AS digit_run_len
         FROM nation
     """,
@@ -664,11 +660,11 @@ def scalar_luhn_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         hof AS (
             SELECT a.l_orderkey,
-                   len(a.qs) AS n_lines,
+                   array_length(a.qs) AS n_lines,
                    list_reduce(
                        list_prepend(CAST(0 AS BIGINT),
                            list_transform(
-                               list_filter(a.qs, q -> q > 25),
+                               filter(a.qs, q -> q > 25),
                                q -> q * 2)),
                        (acc, x) -> acc + x) AS hi_doubled
             FROM arrs a

@@ -329,14 +329,14 @@ _N_BOOT = 64
     oracle=f"""
         WITH base AS (
             SELECT o_orderpriority AS priority,
-                   CAST(o_orderkey AS VARCHAR) AS k,
+                   CAST(o_orderkey AS STRING) AS k,
                    CAST(o_totalprice AS DECIMAL(12,2)) AS x
             FROM orders
         ),
         rep AS (
             SELECT priority, b,
                    {pois_case_sql(
-                       "CAST('0x' || substr(md5(k || '#' || CAST(b AS VARCHAR)), 1, 4) AS BIGINT)"
+                       "CAST('0x' || substr(md5(k || '#' || CAST(b AS STRING)), 1, 4) AS BIGINT)"
                    )} AS w,
                    x
             FROM base
@@ -344,8 +344,8 @@ _N_BOOT = 64
         ),
         means AS (
             SELECT priority, b,
-                   CAST(CAST(SUM(w * x) AS VARCHAR) AS DOUBLE)
-                     / CAST(CAST(SUM(w) AS VARCHAR) AS DOUBLE) AS m
+                   CAST(CAST(SUM(w * x) AS STRING) AS DOUBLE)
+                     / CAST(CAST(SUM(w) AS STRING) AS DOUBLE) AS m
             FROM rep GROUP BY priority, b
             HAVING SUM(w) > 0
         ),
@@ -364,7 +364,7 @@ _N_BOOT = 64
         ),
         pt AS (
             SELECT priority, COUNT(*) AS n_orders,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE)
                      / CAST(COUNT(*) AS DOUBLE) AS mean_total
             FROM base GROUP BY priority
         )
@@ -458,21 +458,21 @@ _N_PERM = 64
     tags=("stats", "agg"),
     oracle=f"""
         WITH ts AS (
-            SELECT CAST(o_orderkey AS VARCHAR) AS k, x, g
+            SELECT CAST(o_orderkey AS STRING) AS k, x, g
             FROM ({_SAMPLE_SQL.replace("SELECT ", "SELECT o_orderkey, ", 1)})
         ),
         tot AS (
             SELECT SUM(g) AS n1, COUNT(*) - SUM(g) AS n0,
                    (SUM(g) * 65536) // COUNT(*) AS thr,
-                   CAST(CAST(SUM(CASE WHEN g = 1 THEN x END) AS VARCHAR) AS DOUBLE)
-                     / CAST(CAST(SUM(g) AS VARCHAR) AS DOUBLE)
-                   - CAST(CAST(SUM(CASE WHEN g = 0 THEN x END) AS VARCHAR) AS DOUBLE)
-                     / CAST(CAST(COUNT(*) - SUM(g) AS VARCHAR) AS DOUBLE) AS obs_diff
+                   CAST(CAST(SUM(CASE WHEN g = 1 THEN x END) AS STRING) AS DOUBLE)
+                     / CAST(CAST(SUM(g) AS STRING) AS DOUBLE)
+                   - CAST(CAST(SUM(CASE WHEN g = 0 THEN x END) AS STRING) AS DOUBLE)
+                     / CAST(CAST(COUNT(*) - SUM(g) AS STRING) AS DOUBLE) AS obs_diff
             FROM ts
         ),
         perm AS (
             SELECT p,
-                   CASE WHEN CAST('0x' || substr(md5(k || '@' || CAST(p AS VARCHAR)), 1, 4)
+                   CASE WHEN CAST('0x' || substr(md5(k || '@' || CAST(p AS STRING)), 1, 4)
                              AS BIGINT) < thr
                         THEN 1 ELSE 0 END AS a,
                    x
@@ -482,10 +482,10 @@ _N_PERM = 64
         ),
         diffs AS (
             SELECT p,
-                   CAST(CAST(SUM(CASE WHEN a = 1 THEN x END) AS VARCHAR) AS DOUBLE)
-                     / CAST(CAST(SUM(a) AS VARCHAR) AS DOUBLE)
-                   - CAST(CAST(SUM(CASE WHEN a = 0 THEN x END) AS VARCHAR) AS DOUBLE)
-                     / CAST(CAST(COUNT(*) - SUM(a) AS VARCHAR) AS DOUBLE) AS d
+                   CAST(CAST(SUM(CASE WHEN a = 1 THEN x END) AS STRING) AS DOUBLE)
+                     / CAST(CAST(SUM(a) AS STRING) AS DOUBLE)
+                   - CAST(CAST(SUM(CASE WHEN a = 0 THEN x END) AS STRING) AS DOUBLE)
+                     / CAST(CAST(COUNT(*) - SUM(a) AS STRING) AS DOUBLE) AS d
             FROM perm GROUP BY p
             HAVING SUM(a) > 0 AND SUM(a) < COUNT(*)
         )
@@ -612,14 +612,14 @@ def stat_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         s AS (
             SELECT COUNT(*) AS n,
-                   CAST(CAST(SUM(CAST(rx.mr2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(CAST(ry.mr2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(CAST(rx.mr2 AS DECIMAL(38,0))) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(CAST(ry.mr2 AS DECIMAL(38,0))) AS STRING) AS DOUBLE) AS sy,
                    CAST(CAST(SUM(CAST(rx.mr2 AS DECIMAL(38,0))
-                               * CAST(rx.mr2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sxx,
+                               * CAST(rx.mr2 AS DECIMAL(38,0))) AS STRING) AS DOUBLE) AS sxx,
                    CAST(CAST(SUM(CAST(ry.mr2 AS DECIMAL(38,0))
-                               * CAST(ry.mr2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS syy,
+                               * CAST(ry.mr2 AS DECIMAL(38,0))) AS STRING) AS DOUBLE) AS syy,
                    CAST(CAST(SUM(CAST(rx.mr2 AS DECIMAL(38,0))
-                               * CAST(ry.mr2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sxy
+                               * CAST(ry.mr2 AS DECIMAL(38,0))) AS STRING) AS DOUBLE) AS sxy
             FROM base
             JOIN rx ON rx.v = base.x
             JOIN ry ON ry.v = base.y
@@ -831,10 +831,10 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM cum GROUP BY g
         )
         SELECT g AS priority, n,
-               CAST(CAST(sx AS VARCHAR) AS DOUBLE)
+               CAST(CAST(sx AS STRING) AS DOUBLE)
                  / CAST(n AS DOUBLE) AS mean_total,
-               CAST(CAST(rx2 AS VARCHAR) AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * CAST(CAST(sx AS VARCHAR) AS DOUBLE))
+               CAST(CAST(rx2 AS STRING) AS DOUBLE)
+                 / (CAST(n AS DOUBLE) * CAST(CAST(sx AS STRING) AS DOUBLE))
                  - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE) AS gini
         FROM agg
         ORDER BY priority
@@ -956,8 +956,8 @@ def stat_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT g AS priority, CAST(d AS INT) AS decile,
                CAST(pt.cum_t AS BIGINT) AS n_orders_cum,
                CAST(pt.cum_t AS DOUBLE) / CAST(n AS DOUBLE) AS pop_share,
-               CAST(CAST(pt.cum_rev AS VARCHAR) AS DOUBLE)
-                 / CAST(CAST(tot_rev AS VARCHAR) AS DOUBLE) AS rev_share
+               CAST(CAST(pt.cum_rev AS STRING) AS DOUBLE)
+                 / CAST(CAST(tot_rev AS STRING) AS DOUBLE) AS rev_share
         FROM pts
         ORDER BY priority, decile
     """,
@@ -1082,7 +1082,7 @@ def stat_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(COUNT(*) AS BIGINT) AS k,
                    CAST(SUM(n) AS BIGINT) AS nn,
                    CAST(SUM(s) AS BIGINT) AS ss,
-                   CAST(CAST(SUM(q) AS VARCHAR) AS DOUBLE) AS q_d,
+                   CAST(CAST(SUM(q) AS STRING) AS DOUBLE) AS q_d,
                    {o_ordered_fold_sum(
                        'g',
                        'CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)',
@@ -1296,9 +1296,9 @@ def stat_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         ds AS (SELECT unnest(generate_series(1, 9)) AS d)
         SELECT k.d AS decile, t.n AS n_urgent, t.m AS n_low,
                CAST(CAST(MIN(CASE WHEN c.cum_a >= (k.d * t.n + 9) // 10
-                        THEN c.x END) AS VARCHAR) AS DOUBLE) AS q_urgent,
+                        THEN c.x END) AS STRING) AS DOUBLE) AS q_urgent,
                CAST(CAST(MIN(CASE WHEN c.cum_b >= (k.d * t.m + 9) // 10
-                        THEN c.x END) AS VARCHAR) AS DOUBLE) AS q_low
+                        THEN c.x END) AS STRING) AS DOUBLE) AS q_low
         FROM cum c CROSS JOIN tot t JOIN ds k ON TRUE
         GROUP BY k.d, t.n, t.m
         ORDER BY decile
@@ -1396,7 +1396,7 @@ def stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(COUNT(*) AS BIGINT) AS k,
                    CAST(SUM(n) AS BIGINT) AS nn,
                    CAST(SUM(s) AS BIGINT) AS ss,
-                   CAST(CAST(SUM(q) AS VARCHAR) AS DOUBLE) AS q_d,
+                   CAST(CAST(SUM(q) AS STRING) AS DOUBLE) AS q_d,
                    {o_ordered_fold_sum(
                        'g',
                        'CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)',
@@ -1631,8 +1631,8 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         terms AS (
             SELECT g, nj,
-                   CAST(CAST(s2j AS VARCHAR) AS DOUBLE)
-                     * CAST(CAST(s2j AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(s2j AS STRING) AS DOUBLE)
+                     * CAST(CAST(s2j AS STRING) AS DOUBLE)
                      / (CAST(4 AS DOUBLE) * CAST(nj AS DOUBLE)) AS tj
             FROM per
         ),
@@ -1644,7 +1644,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ties AS (
             SELECT CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * t * t - t)
-                        AS VARCHAR) AS DOUBLE) AS t3
+                        AS STRING) AS DOUBLE) AS t3
             FROM (SELECT COUNT(*) AS t FROM base GROUP BY x)
         )
         SELECT k, n,
@@ -1954,7 +1954,7 @@ def stat_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(xc) AS BIGINT) AS sx,
                    CAST(CAST(SUM(CAST(xc AS DECIMAL(19,0)) * xc)
-                        AS VARCHAR) AS DOUBLE) AS sxx
+                        AS STRING) AS DOUBLE) AS sxx
             FROM lab GROUP BY grp
         ),
         wide AS (
@@ -2002,8 +2002,8 @@ def stat_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - CAST(3 AS DOUBLE)
                       / (CAST(4 AS DOUBLE) * (w.n1 + w.n2) - 9)) END
                    AS hedges_g,
-               (CAST(CAST(p.n_gt AS VARCHAR) AS DOUBLE)
-                - CAST(CAST(p.n_lt AS VARCHAR) AS DOUBLE))
+               (CAST(CAST(p.n_gt AS STRING) AS DOUBLE)
+                - CAST(CAST(p.n_lt AS STRING) AS DOUBLE))
                  / (CAST(w.n1 AS DOUBLE) * CAST(w.n2 AS DOUBLE))
                    AS cliffs_delta
         FROM wide w CROSS JOIN pairs p
@@ -2107,7 +2107,7 @@ def stat_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(xq) AS BIGINT) AS s,
                    CAST(CAST(SUM(CAST(xq AS DECIMAL(19,0)) * xq)
-                        AS VARCHAR) AS DOUBLE) AS q
+                        AS STRING) AS DOUBLE) AS q
             FROM lab GROUP BY treated, post
         ),
         wide AS (
@@ -2773,13 +2773,13 @@ def stat_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(CAST(SUM(CASE WHEN d.diff > 0
                         THEN CAST(rv.mr2 AS DECIMAL(38,0))
-                        ELSE CAST(0 AS DECIMAL(38,0)) END) AS VARCHAR)
+                        ELSE CAST(0 AS DECIMAL(38,0)) END) AS STRING)
                         AS DOUBLE) AS w2p
             FROM d JOIN rv ON rv.v = d.ad
         ),
         ties AS (
             SELECT CAST(CAST(SUM(CAST(t AS DECIMAL(38,0)) * t * t - t)
-                        AS VARCHAR) AS DOUBLE) AS t3
+                        AS STRING) AS DOUBLE) AS t3
             FROM (SELECT COUNT(*) AS t FROM d GROUP BY ad)
         )
         SELECT n, w2p / 2 AS w_plus,
@@ -2995,7 +2995,7 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       * CAST(d AS DECIMAL(15,0))
                                       AS DECIMAL(30,0))
                                  * CAST(t AS DECIMAL(7,0)))
-                        AS VARCHAR) AS DOUBLE) AS sq
+                        AS STRING) AS DOUBLE) AS sq
             FROM terms
         )
         SELECT tot.n, tot.m,
@@ -4004,8 +4004,8 @@ def _jt_pair_sql() -> str:
                CAST(jt.jt2 AS DOUBLE) / 2 AS jt_u,
                CASE WHEN mom.var72 > 0 THEN
                  (CAST(jt.jt2 AS DOUBLE)
-                  - CAST(CAST(mom.e2_num AS VARCHAR) AS DOUBLE) / 2)
-                 / (2 * sqrt(CAST(CAST(mom.var72 AS VARCHAR) AS DOUBLE)
+                  - CAST(CAST(mom.e2_num AS STRING) AS DOUBLE) / 2)
+                 / (2 * sqrt(CAST(CAST(mom.var72 AS STRING) AS DOUBLE)
                              / 72))
                END AS z_stat
         FROM jt CROSS JOIN mom
@@ -4165,8 +4165,8 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
         tot AS (
             SELECT CAST(SUM(n_g) AS BIGINT) AS n,
                    CAST(COUNT(*) AS BIGINT) AS k,
-                   CAST(CAST(SUM(s_g) AS VARCHAR) AS DOUBLE) AS ss,
-                   CAST(CAST(SUM(s4_g) AS VARCHAR) AS DOUBLE) AS s4
+                   CAST(CAST(SUM(s_g) AS STRING) AS DOUBLE) AS ss,
+                   CAST(CAST(SUM(s4_g) AS STRING) AS DOUBLE) AS s4
             FROM g
         )
         SELECT tot.n AS n_days, tot.k, (tot.k - 1) AS df,
@@ -4174,8 +4174,8 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
                          > 0 THEN
                  (CAST(tot.n AS DOUBLE) - 1)
                  * (list_reduce(
-                        list(CAST(CAST(g.s_g AS VARCHAR) AS DOUBLE)
-                             * CAST(CAST(g.s_g AS VARCHAR) AS DOUBLE)
+                        list(CAST(CAST(g.s_g AS STRING) AS DOUBLE)
+                             * CAST(CAST(g.s_g AS STRING) AS DOUBLE)
                              / CAST(g.n_g AS DOUBLE)
                              ORDER BY g.segment),
                         (acc, x) -> acc + x)
@@ -4502,10 +4502,10 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lng AS (
             SELECT g, nj,
-                   CAST(CAST(ssd_num AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(ssd_num AS STRING) AS DOUBLE)
                      / CAST(nj AS DOUBLE) AS ssd,
                    CASE WHEN ssd_num > 0 THEN
-                     CAST(ln(CAST(CAST(ssd_num AS VARCHAR) AS DOUBLE)
+                     CAST(ln(CAST(CAST(ssd_num AS STRING) AS DOUBLE)
                              / CAST(nj AS DOUBLE)
                              / (CAST(nj AS DOUBLE) - 1))
                           AS DECIMAL(12,6))
@@ -4517,7 +4517,7 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(nj) AS BIGINT) AS n,
                    CAST(SUM(CASE WHEN lnq IS NOT NULL THEN 1 ELSE 0 END)
                         AS BIGINT) AS k_ok,
-                   CAST(CAST(SUM((nj - 1) * lnq) AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM((nj - 1) * lnq) AS STRING) AS DOUBLE)
                        AS wsum,
                    {o_ordered_fold_sum('g', 'ssd')}
                        AS ssd_pool,
@@ -4531,7 +4531,7 @@ def stat_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN k_ok = k AND n > k THEN
                  (CAST(n - k AS DOUBLE)
                   * CAST(CAST(CAST(ln(ssd_pool / CAST(n - k AS DOUBLE))
-                                   AS DECIMAL(12,6)) AS VARCHAR) AS DOUBLE)
+                                   AS DECIMAL(12,6)) AS STRING) AS DOUBLE)
                   - wsum)
                  / (CAST(1 AS DOUBLE)
                     + (rsum - CAST(1 AS DOUBLE) / CAST(n - k AS DOUBLE))
@@ -4650,25 +4650,25 @@ def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM joined
         )
         SELECT n,
-               CAST(CAST(t2 AS VARCHAR) AS DOUBLE) / 2 AS t_stat,
+               CAST(CAST(t2 AS STRING) AS DOUBLE) / 2 AS t_stat,
                CASE WHEN n > 1
                      AND CAST(n AS DOUBLE) * CAST(sll AS DOUBLE)
                          - CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) > 0
-                     AND CAST(n AS DOUBLE) * CAST(CAST(suu AS VARCHAR)
+                     AND CAST(n AS DOUBLE) * CAST(CAST(suu AS STRING)
                                                   AS DOUBLE)
-                         - CAST(CAST(su AS VARCHAR) AS DOUBLE)
-                           * CAST(CAST(su AS VARCHAR) AS DOUBLE) > 0 THEN
-                 (CAST(CAST(t2 AS VARCHAR) AS DOUBLE)
+                         - CAST(CAST(su AS STRING) AS DOUBLE)
+                           * CAST(CAST(su AS STRING) AS DOUBLE) > 0 THEN
+                 (CAST(CAST(t2 AS STRING) AS DOUBLE)
                   - CAST(sl AS DOUBLE)
-                    * CAST(CAST(su AS VARCHAR) AS DOUBLE)
+                    * CAST(CAST(su AS STRING) AS DOUBLE)
                     / CAST(n AS DOUBLE))
                  / sqrt(
                      (CAST(sll AS DOUBLE)
                       - CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE)
                         / CAST(n AS DOUBLE))
-                     * (CAST(CAST(suu AS VARCHAR) AS DOUBLE)
-                        - CAST(CAST(su AS VARCHAR) AS DOUBLE)
-                          * CAST(CAST(su AS VARCHAR) AS DOUBLE)
+                     * (CAST(CAST(suu AS STRING) AS DOUBLE)
+                        - CAST(CAST(su AS STRING) AS DOUBLE)
+                          * CAST(CAST(su AS STRING) AS DOUBLE)
                           / CAST(n AS DOUBLE))
                      / (CAST(n AS DOUBLE) - 1))
                END AS z_trend
@@ -4860,35 +4860,6 @@ _MONTH_GRID_SQL = """
 """
 
 
-def _month_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(m, segment, x0): month x segment revenue grid with absent
-    cells as exact 0 — every judge ranks every object."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    months = o.select(
-        F.date_format("o_orderdate", "yyyy-MM").alias("m")
-    ).distinct()
-    segs = c.select(F.col("c_mktsegment").alias("segment")).distinct()
-    msum = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.date_format("o_orderdate", "yyyy-MM").alias("m"),
-        )
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-             .cast("decimal(18,2)").alias("x"))
-    )
-    return (
-        months.crossJoin(F.broadcast(segs))
-        .join(F.broadcast(msum), ["m", "segment"], "left")
-        .select(
-            "m",
-            "segment",
-            F.coalesce(F.col("x"), F.lit(0).cast("decimal(18,2)")).alias("x0"),
-        )
-    )
-
-
 @register(
     "stat_kendall_w",
     tags=("stats", "window", "agg"),
@@ -4947,62 +4918,7 @@ def stat_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     the denominator -> NULL identically on both engines. Scale: corpus
     work is the month x segment aggregation; ranking runs on the
     |months| x |segments| grid relation."""
-    grid = _month_grid(spark, sf_dir)
-    wrk = Window.partitionBy("segment").orderBy("x0")
-    ranked = grid.select(
-        "m",
-        "segment",
-        "x0",
-        F.rank().over(wrk).alias("rk"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("segment", "x0"))
-        .alias("teq"),
-    )
-    rsum = ranked.groupBy("m").agg(
-        F.sum(2 * F.col("rk") + F.col("teq") - 1).cast("bigint").alias("r2")
-    )
-    dims = grid.agg(
-        F.countDistinct("m").cast("bigint").alias("n"),
-        F.countDistinct("segment").cast("bigint").alias("mj"),
-    )
-    ties = (
-        grid.groupBy("segment", "x0")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
-        .agg(
-            F.sum(
-                F.col("t") * F.col("t") * F.col("t") - F.col("t")
-            ).cast("bigint").alias("tsum")
-        )
-    )
-    s4 = (
-        rsum.crossJoin(F.broadcast(dims))
-        .select(
-            (
-                (F.col("r2") - F.col("mj") * (F.col("n") + 1))
-                * (F.col("r2") - F.col("mj") * (F.col("n") + 1))
-            ).alias("sq")
-        )
-        .agg(F.sum("sq").cast("bigint").alias("s4"))
-    )
-    den = (
-        F.col("mj") * F.col("mj")
-        * (F.col("n") * F.col("n") * F.col("n") - F.col("n"))
-        - F.col("mj") * F.col("tsum")
-    )
-    return (
-        dims.crossJoin(F.broadcast(ties))
-        .crossJoin(F.broadcast(s4))
-        .select(
-            F.col("n").alias("n_months"),
-            F.col("mj").alias("m_judges"),
-            F.col("s4").alias("s_numer"),
-            F.col("tsum").alias("tie_term"),
-            F.when(
-                den > 0,
-                (3 * F.col("s4")).cast("double") / den.cast("double"),
-            ).alias("w"),
-        )
-    )
+    return run_sql(spark, sf_dir, "stat_kendall_w")
 
 
 # ---------------------------------------------------------------------------
@@ -5189,7 +5105,7 @@ _UNIF_POS_SQL = """
         uni AS (
             SELECT o_orderkey AS key,
                    CAST('0x' || SUBSTRING(
-                       md5(CAST(o_orderkey AS VARCHAR)), 1, 6) AS BIGINT) AS k
+                       md5(CAST(o_orderkey AS STRING)), 1, 6) AS BIGINT) AS k
             FROM orders
         ),
         pos AS (
@@ -5386,23 +5302,6 @@ _LOMED_ROW = """
                 FROM {src}
             )
 """
-
-
-def _lomed(df: DataFrame, part: str, val: str, tie: str) -> DataFrame:
-    """Attach the lower median of ``val`` within ``part`` as `med`."""
-    wrn = Window.partitionBy(part).orderBy(val, tie)
-    wall = Window.partitionBy(part)
-    picked = df.withColumn(
-        "_pick",
-        F.when(
-            F.row_number().over(wrn)
-            == (F.count(F.lit(1)).over(wall) + 1) / 2,
-            F.col(val),
-        ),
-    )
-    return picked.withColumn(
-        "med", F.max("_pick").over(wall).cast("bigint")
-    ).drop("_pick")
 
 
 @register(
@@ -6205,7 +6104,7 @@ def stat_cramers_v_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
             CROSS JOIN tot t
         )
         SELECT lang, source, nij, ai, bj, n,
-               CAST(CAST(lnp_dec AS VARCHAR) AS DOUBLE) AS log_p
+               CAST(CAST(lnp_dec AS STRING) AS DOUBLE) AS log_p
         FROM joined
     """,
 )
@@ -6316,11 +6215,11 @@ def stat_hypergeom_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM pos
         )
         SELECT CAST(n AS BIGINT) AS n,
-               ((CAST(CAST(a_sum AS VARCHAR) AS DOUBLE)
+               ((CAST(CAST(a_sum AS STRING) AS DOUBLE)
                    / (CAST(16777216 AS DOUBLE) * CAST(16777216 AS DOUBLE))
-                 - CAST(CAST(b_sum AS VARCHAR) AS DOUBLE)
+                 - CAST(CAST(b_sum AS STRING) AS DOUBLE)
                    / (CAST(n AS DOUBLE) * CAST(16777216 AS DOUBLE)))
-                + CAST(CAST(c_sum AS VARCHAR) AS DOUBLE)
+                + CAST(CAST(c_sum AS STRING) AS DOUBLE)
                   / (CAST(4 AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
                + CAST(1 AS DOUBLE) / (CAST(12 AS DOUBLE) * CAST(n AS DOUBLE))
                    AS w2_stat
@@ -6390,7 +6289,7 @@ def stat_cvm_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT CAST(n AS BIGINT) AS n,
                -CAST(n AS DOUBLE)
-                 - CAST(CAST(s AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
+                 - CAST(CAST(s AS STRING) AS DOUBLE) / CAST(n AS DOUBLE)
                    AS a2_stat
         FROM terms
     """,
@@ -6855,7 +6754,7 @@ def stat_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT seg, ng, sg, n, s,
                    CAST(sg AS DOUBLE) / CAST(100 AS DOUBLE)
                        / CAST(ng AS DOUBLE) AS mean_g,
-                   CAST(CAST(sxlnx AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(sxlnx AS STRING) AS DOUBLE)
                        / CAST(sg AS DOUBLE)
                      - CAST(ln(CAST(sg AS DOUBLE) / CAST(100 AS DOUBLE)
                                / CAST(ng AS DOUBLE)) AS DECIMAL(12,6))

@@ -1026,15 +1026,15 @@ def stream_live_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS t
+                   filter(string_split(text, ' '), t -> t <> '') AS t
             FROM documents
         ),
         sh AS (
             SELECT doc_id,
                    unnest(list_distinct(list_transform(
-                       generate_series(1, len(t) - 1),
+                       generate_series(1, array_length(t) - 1),
                        i -> array_to_string(t[i : i + 1], ' ')))) AS shingle
-            FROM toks WHERE len(t) >= 2
+            FROM toks WHERE array_length(t) >= 2
         ),
         corpus_sh AS (SELECT * FROM sh WHERE doc_id % 17 <> 0),
         batch_sh AS (SELECT * FROM sh WHERE doc_id % 17 = 0),
@@ -1252,14 +1252,14 @@ def stream_live_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH docs AS MATERIALIZED (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS lst
+                   filter(string_split(text, ' '), t -> t <> '') AS lst
             FROM documents
         ),
         corpus_big AS MATERIALIZED (
             SELECT doc_id, lst[i] AS w1, lst[i + 1] AS w2
             FROM (SELECT doc_id, lst,
-                         unnest(generate_series(1, len(lst) - 1)) AS i
-                  FROM docs WHERE len(lst) >= 2)
+                         unnest(generate_series(1, array_length(lst) - 1)) AS i
+                  FROM docs WHERE array_length(lst) >= 2)
             WHERE doc_id % 17 <> 0
         ),
         c12 AS (SELECT w1, w2, COUNT(*) AS c12
@@ -1272,8 +1272,8 @@ def stream_live_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_big AS (
             SELECT doc_id, lst[i] AS w1, lst[i + 1] AS w2
             FROM (SELECT doc_id, lst,
-                         unnest(generate_series(1, len(lst) - 1)) AS i
-                  FROM docs WHERE len(lst) >= 2)
+                         unnest(generate_series(1, array_length(lst) - 1)) AS i
+                  FROM docs WHERE array_length(lst) >= 2)
             WHERE doc_id % 17 = 0
         ),
         doc_big AS (
@@ -1286,7 +1286,7 @@ def stream_live_backfill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(CAST(-SUM(db.m * CAST(ln(
                            CAST(COALESCE(p.c12, 0) + 1 AS DOUBLE)
                            / CAST(COALESCE(u.c1, 0) + vo.v AS DOUBLE))
-                        AS DECIMAL(12,6))) AS VARCHAR) AS DOUBLE)
+                        AS DECIMAL(12,6))) AS STRING) AS DOUBLE)
                      / CAST(SUM(db.m) AS DOUBLE) AS avg_nll
             FROM doc_big db
             LEFT JOIN c12 p ON p.w1 = db.w1 AND p.w2 = db.w2

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from finance_etl_spark.functions.money import as_d, fsum, o_fsum
+from finance_etl_spark.functions.money import as_d, o_fsum
 from finance_etl_spark.io.readers import load_table, load_table_parallel
 from finance_etl_spark.operators.ranks import global_rank_running_sums
 from finance_etl_spark.plans.recipes import (
@@ -168,8 +168,8 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "tokenize"),
     oracle=r"""
         SELECT doc_id,
-               len(string_split(text, ' ')) AS n_ws_tokens,
-               len(regexp_extract_all(text, '[a-zA-Z0-9_]+|[^a-zA-Z0-9_\s]')) AS n_bpe_ish_tokens,
+               array_length(string_split(text, ' ')) AS n_ws_tokens,
+               array_length(regexp_extract_all(text, '[a-zA-Z0-9_]+|[^a-zA-Z0-9_\s]', 0)) AS n_bpe_ish_tokens,
                CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_chars_div4
         FROM documents
     """,
@@ -196,7 +196,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT doc_id,
                md5(array_to_string(list_sort(list_distinct(
-                   list_filter(string_split(text, ' '), t -> t <> ''))), ' '))
+                   filter(string_split(text, ' '), t -> t <> ''))), ' '))
                    AS bag_fingerprint,
                md5(text) AS content_fingerprint
         FROM documents
@@ -310,7 +310,7 @@ def _minhash_md5_sql() -> str:
     band_union = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_id, md5("
         + " || '-' || ".join(
-            f"CAST(s{b * ROWS_PER_BAND + r} AS VARCHAR)"
+            f"CAST(s{b * ROWS_PER_BAND + r} AS STRING)"
             for r in range(ROWS_PER_BAND)
         )
         + ") AS band_hash FROM sigs"
@@ -319,14 +319,14 @@ def _minhash_md5_sql() -> str:
     return f"""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), x -> x <> '') AS t
+                   filter(string_split(text, ' '), x -> x <> '') AS t
             FROM documents
         ),
         grams AS (
             SELECT doc_id,
                    list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                  FOR i IN range(1, len(t)-1)]) AS g
-            FROM toks WHERE len(t) >= 3
+                                  FOR i IN range(1, array_length(t)-1)]) AS g
+            FROM toks WHERE array_length(t) >= 3
         ),
         hashes AS (
             SELECT doc_id,
@@ -355,7 +355,7 @@ def _minhash_md5_sql() -> str:
             JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
             GROUP BY 1, 2, 3
         ),
-        sizes AS (SELECT doc_id, len(g) AS n_sh FROM grams)
+        sizes AS (SELECT doc_id, array_length(g) AS n_sh FROM grams)
         SELECT m.id_a, m.id_b, m.n_bands, m.n_common,
                CAST(m.n_common AS DOUBLE)
                  / (za.n_sh + zb.n_sh - m.n_common) AS jaccard
@@ -622,14 +622,14 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), x -> x <> '') AS toks
+                   filter(string_split(text, ' '), x -> x <> '') AS toks
             FROM documents
         ),
         g AS (
             SELECT doc_id,
-                   list_transform(range(1, len(toks) - 1),
+                   list_transform(range(1, array_length(toks) - 1),
                                   i -> array_to_string(toks[i:i+2], ' ')) AS grams
-            FROM t WHERE len(toks) >= 3
+            FROM t WHERE array_length(toks) >= 3
         ),
         h AS (
             SELECT doc_id,
@@ -639,9 +639,9 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         w AS (
             SELECT doc_id,
-                   list_distinct(list_transform(range(1, len(hs) - 2),
+                   list_distinct(list_transform(range(1, array_length(hs) - 2),
                                                 i -> list_min(hs[i:i+3]))) AS fps
-            FROM h WHERE len(hs) >= 4
+            FROM h WHERE array_length(hs) >= 4
         )
         SELECT doc_id, unnest(fps) AS fp FROM w
     """,
@@ -786,7 +786,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH toks AS ({TOKENS_SQL}),
         train_toks AS (
             SELECT t.* FROM toks t
-            WHERE substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 2) < 'cc'
+            WHERE substr(md5(CAST(t.doc_id AS STRING)), 1, 2) < 'cc'
         ),
         freq AS (SELECT tok, COUNT(*) AS c FROM train_toks GROUP BY 1),
         tot AS (
@@ -873,16 +873,16 @@ def text_unigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS tk
+                   filter(string_split(text, ' '), t -> t <> '') AS tk
             FROM documents
         ),
         starts AS (
-            SELECT doc_id, tk, unnest(range(0, len(tk), 40)) AS start
-            FROM toks WHERE len(tk) >= 1
+            SELECT doc_id, tk, unnest(range(0, array_length(tk), 40)) AS start
+            FROM toks WHERE array_length(tk) >= 1
         )
         SELECT doc_id,
                CAST(start / 40 AS BIGINT) AS chunk_id,
-               CAST(least(50, len(tk) - start) AS BIGINT) AS n_chunk_tokens,
+               CAST(least(50, array_length(tk) - start) AS BIGINT) AS n_chunk_tokens,
                md5(array_to_string(tk[start + 1 : start + 50], ' '))
                    AS chunk_hash
         FROM starts
@@ -1097,7 +1097,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST((obs * c_tot - c_tok * s_tot) AS DOUBLE)
                    * (obs * c_tot - c_tok * s_tot)
                    / (CAST(c_tok AS DOUBLE) * s_tot * c_tot)
-                 AS DECIMAL(30,10))) AS VARCHAR)::DOUBLE AS chi2,
+                 AS DECIMAL(30,10))) AS STRING)::DOUBLE AS chi2,
                CAST(SUM(CASE WHEN obs > 0 THEN 1 ELSE 0 END) AS INT) AS n_present
         FROM grid
         GROUP BY source
@@ -1209,10 +1209,10 @@ _SPAN_N = 8
         spans AS (
             SELECT doc_id,
                    unnest(list_distinct(list_transform(
-                       generate_series(1, len(t) - {_SPAN_N} + 1),
+                       generate_series(1, array_length(t) - {_SPAN_N} + 1),
                        i -> array_to_string(t[i : i + {_SPAN_N} - 1], ' ')
                    ))) AS span
-            FROM doc_arr WHERE len(t) >= {_SPAN_N}
+            FROM doc_arr WHERE array_length(t) >= {_SPAN_N}
         ),
         hot AS (
             SELECT span FROM spans GROUP BY span HAVING COUNT(*) > 1
@@ -1280,7 +1280,7 @@ def text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS ts
+                   filter(string_split(text, ' '), t -> t <> '') AS ts
             FROM documents
         ),
         uni AS (SELECT unnest(ts) AS tok FROM toks),
@@ -1288,9 +1288,9 @@ def text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM uni),
         pairs AS (
             SELECT unnest(list_transform(
-                       range(1, len(ts)),
+                       range(1, array_length(ts)),
                        i -> struct_pack(a := ts[i], b := ts[i + 1]))) AS p
-            FROM toks WHERE len(ts) >= 2
+            FROM toks WHERE array_length(ts) >= 2
         ),
         pc AS (
             SELECT p.a AS tok_a, p.b AS tok_b,
@@ -1495,7 +1495,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH base AS (
             SELECT doc_id, source, lang, n_chars,
-                   len(list_filter(string_split(text, ' '), t -> t <> ''))
+                   array_length(filter(string_split(text, ' '), t -> t <> ''))
                        AS n_toks,
                    md5(text) AS th
             FROM documents
@@ -1622,14 +1622,14 @@ def text_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH toks AS (
             SELECT doc_id, source,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS t
+                   filter(string_split(text, ' '), t -> t <> '') AS t
             FROM documents
         ),
         split AS (
             SELECT doc_id, source,
                    array_to_string(t[1:12], ' ') AS prompt,
-                   array_to_string(t[13:len(t)], ' ') AS completion
-            FROM toks WHERE len(t) >= 24
+                   array_to_string(t[13:array_length(t)], ' ') AS completion
+            FROM toks WHERE array_length(t) >= 24
         )
         SELECT doc_id, source,
                to_json(struct_pack(messages := [
@@ -1691,15 +1691,15 @@ def text_export_chat_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS t
+                   filter(string_split(text, ' '), t -> t <> '') AS t
             FROM documents
         ),
         sh AS (
             SELECT doc_id,
                    unnest(list_distinct(list_transform(
-                       generate_series(1, len(t) - 1),
+                       generate_series(1, array_length(t) - 1),
                        i -> array_to_string(t[i : i + 1], ' ')))) AS shingle
-            FROM toks WHERE len(t) >= 2
+            FROM toks WHERE array_length(t) >= 2
         ),
         rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= 50),
         idx AS (SELECT s.* FROM sh s JOIN rare USING (shingle)),
@@ -1867,7 +1867,7 @@ def text_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         split_bg AS (
             SELECT doc_id, bg,
-                   substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS gate
+                   substr(md5(CAST(doc_id AS STRING)), 1, 2) AS gate
             FROM bigrams WHERE bg IS NOT NULL
         ),
         train_vocab AS (
@@ -2137,7 +2137,7 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH docs AS MATERIALIZED (
             SELECT doc_id,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS lst
+                   filter(string_split(text, ' '), t -> t <> '') AS lst
             FROM documents
         ),
         tris AS MATERIALIZED (
@@ -2145,8 +2145,8 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                    lst[i] || ' ' || lst[i + 1] || ' ' || lst[i + 2] AS tri
             FROM (
                 SELECT doc_id, lst,
-                       unnest(generate_series(1, len(lst) - 2)) AS i
-                FROM docs WHERE len(lst) >= 3
+                       unnest(generate_series(1, array_length(lst) - 2)) AS i
+                FROM docs WHERE array_length(lst) >= 3
             )
         ),
         first_seen AS (
@@ -2229,7 +2229,7 @@ _ZIPF_INTERCEPT = "(sy - ((n_d * sxy - sx * sy) / (n_d * sxx - sx * sx)) * sx) /
         WITH freqs AS (
             SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq
             FROM (
-                SELECT unnest(list_filter(string_split(text, ' '),
+                SELECT unnest(filter(string_split(text, ' '),
                                           t -> t <> '')) AS tok
                 FROM documents
             )
@@ -2250,10 +2250,10 @@ _ZIPF_INTERCEPT = "(sy - ((n_d * sxy - sx * sy) / (n_d * sxx - sx * sx)) * sx) /
         ),
         s AS (
             SELECT CAST(COUNT(*) AS DOUBLE) AS n_d,
-                   CAST(CAST(SUM(lx) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(ly) AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(lx * lx) AS VARCHAR) AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(lx * ly) AS VARCHAR) AS DOUBLE) AS sxy
+                   CAST(CAST(SUM(lx) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(ly) AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(lx * lx) AS STRING) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(lx * ly) AS STRING) AS DOUBLE) AS sxy
             FROM pts
         )
         SELECT CAST(n_d AS BIGINT) AS n_points,
@@ -2390,18 +2390,18 @@ def _rouge_pairs_sql() -> str:
         ),
         seqs AS (
             SELECT doc_id,
-                   (list_filter(string_split(text, ' '),
+                   (filter(string_split(text, ' '),
                                 t -> t <> ''))[1:{_ROUGE_K}] AS toks
             FROM documents
         ),
         ps AS (
             SELECT p.id_a, p.id_b, p.jaccard,
                    sa.toks AS va, sb.toks AS vb,
-                   len(sa.toks) AS n, len(sb.toks) AS m
+                   array_length(sa.toks) AS n, array_length(sb.toks) AS m
             FROM pairs p
             JOIN seqs sa ON sa.doc_id = p.id_a
             JOIN seqs sb ON sb.doc_id = p.id_b
-            WHERE len(sa.toks) > 0 AND len(sb.toks) > 0
+            WHERE array_length(sa.toks) > 0 AND array_length(sb.toks) > 0
         ),
         dp AS (
             SELECT id_a, id_b, 0 AS k,
@@ -2542,11 +2542,11 @@ def text_rouge_l_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH per_doc AS (
             SELECT lang,
-                   CAST(len(list_filter(string_split(text, ' '),
+                   CAST(array_length(filter(string_split(text, ' '),
                         t -> t <> '')) AS BIGINT) AS w,
-                   CAST(GREATEST(1, len(regexp_extract_all(text,
-                        '[.!?]+'))) AS BIGINT) AS s,
-                   CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
+                   CAST(GREATEST(1, array_length(regexp_extract_all(text,
+                        '[.!?]+', 0))) AS BIGINT) AS s,
+                   CAST(array_length(regexp_extract_all(lower(text), '[aeiouy]+', 0))
                         AS BIGINT) AS syl
             FROM documents
         ),
@@ -2583,45 +2583,7 @@ def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction is order-free. One scan, one small-key shuffle;
     everything per-doc is a JVM-side row projection (no Python)."""
 
-    d = load_table_parallel(spark, sf_dir, "documents")
-    per_doc = d.select(
-        "lang",
-        F.size(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        )
-        .cast("bigint")
-        .alias("w"),
-        F.greatest(
-            F.lit(1),
-            F.size(F.regexp_extract_all(F.col("text"), F.lit("[.!?]+"), 0)),
-        )
-        .cast("bigint")
-        .alias("s"),
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[aeiouy]+"), 0)
-        )
-        .cast("bigint")
-        .alias("syl"),
-    ).filter(F.col("w") > 0)
-    fk = (
-        F.lit(0.39) * (F.col("w").cast("double") / F.col("s").cast("double"))
-        + F.lit(11.8)
-        * (F.col("syl").cast("double") / F.col("w").cast("double"))
-        - F.lit(15.59)
-    )
-    return (
-        per_doc.select("lang", "w", "syl", fk.alias("fk"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("w").cast("bigint").alias("total_words"),
-            F.sum("syl").cast("bigint").alias("total_syllables"),
-            (fsum(F.col("fk")) / F.count(F.lit(1)).cast("double")).alias(
-                "mean_fk_grade"
-            ),
-        )
-        .orderBy("lang")
-    )
+    return run_sql(spark, sf_dir, "text_readability_fk")
 
 
 @register(
@@ -2839,11 +2801,11 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS n_braces,
                CAST(length(text) - length(replace(text, ';', ''))
                     AS BIGINT) AS n_semicolons,
-               CAST(len(regexp_extract_all(text, '[a-z]+[A-Z][a-zA-Z]*'))
+               CAST(array_length(regexp_extract_all(text, '[a-z]+[A-Z][a-zA-Z]*', 0))
                     AS BIGINT) AS n_camel,
-               CAST(len(regexp_extract_all(text, '[a-z0-9]+_[a-z0-9_]+'))
+               CAST(array_length(regexp_extract_all(text, '[a-z0-9]+_[a-z0-9_]+', 0))
                     AS BIGINT) AS n_snake,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT)
+               CAST(array_length(regexp_extract_all(text, '[0-9]', 0)) AS BIGINT)
                    AS n_digits,
                CAST(length(text) AS BIGINT) AS n_chars,
                ((CAST(length(text) - length(replace(text, '{', ''))
@@ -2851,9 +2813,9 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
                      AS DOUBLE)
                  + (length(text) - length(replace(text, ';', ''))))
                    / length(text) > 0.01
-                OR CAST(len(regexp_extract_all(text,
-                       '[a-z]+[A-Z][a-zA-Z]*')) AS DOUBLE)
-                   / len(string_split(text, ' ')) > 0.05)
+                OR CAST(array_length(regexp_extract_all(text,
+                       '[a-z]+[A-Z][a-zA-Z]*', 0)) AS DOUBLE)
+                   / array_length(string_split(text, ' ')) > 0.05)
                    AS looks_like_code
         FROM documents
         ORDER BY doc_id
@@ -3074,7 +3036,7 @@ def text_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH toks AS (
             SELECT doc_id, lower(tok) AS tok
             FROM (SELECT doc_id,
-                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+', 0))
                              AS tok
                   FROM documents)
         ),
@@ -3154,7 +3116,7 @@ def text_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=r"""
         WITH toks AS (
             SELECT lower(tok) AS tok
-            FROM (SELECT unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+            FROM (SELECT unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+', 0))
                       AS tok
                   FROM documents)
         ),
@@ -3166,10 +3128,10 @@ def text_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS vocab,
                -CAST(CAST(SUM(n_v * CAST(ln(CAST(n_v AS DOUBLE)
                         / CAST(tot.n AS DOUBLE)) AS DECIMAL(12,6)))
-                     AS VARCHAR) AS DOUBLE) / CAST(tot.n AS DOUBLE)
+                     AS STRING) AS DOUBLE) / CAST(tot.n AS DOUBLE)
                    AS entropy_nats,
                CAST(CAST(SUM(CAST(n_v AS DECIMAL(38,0)) * n_v)
-                    AS VARCHAR) AS DOUBLE)
+                    AS STRING) AS DOUBLE)
                  / (CAST(tot.n AS DOUBLE) * tot.n) AS simpson_repeat_prob
         FROM uni CROSS JOIN tot
         GROUP BY tot.n
@@ -3234,7 +3196,7 @@ def text_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en,
                    lower(tok) AS tok
             FROM (SELECT lang,
-                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+', 0))
                              AS tok
                   FROM documents)
         ),
@@ -3268,8 +3230,8 @@ def text_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS vocab_en,
                CAST(SUM(CASE WHEN nq > 0 THEN 1 ELSE 0 END) AS BIGINT)
                    AS vocab_other,
-               (CAST(CAST(SUM(hp) AS VARCHAR) AS DOUBLE) / tp
-                + CAST(CAST(SUM(hq) AS VARCHAR) AS DOUBLE) / tq)
+               (CAST(CAST(SUM(hp) AS STRING) AS DOUBLE) / tp
+                + CAST(CAST(SUM(hq) AS STRING) AS DOUBLE) / tq)
                / CAST(2 AS DOUBLE) AS jsd_nats
         FROM terms GROUP BY tp, tq
     """,
@@ -3407,10 +3369,10 @@ def text_levenshtein_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH per_doc AS (
             SELECT source,
-                   CAST(len(list_filter(
+                   CAST(array_length(filter(
                        regexp_split_to_array(text, '[.!?]+'),
                        s -> len(trim(s)) > 0)) AS BIGINT) AS n_sent,
-                   CAST(len(list_filter(
+                   CAST(array_length(filter(
                        regexp_split_to_array(text, '[ \t\n\r]+'),
                        w -> len(w) > 0)) AS BIGINT) AS n_words
             FROM documents
@@ -3440,43 +3402,7 @@ def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions. Sources with only unpunctuated docs NULL
     words_per_sentence identically. One scan, one |sources|-row
     agg."""
-    d = load_table(spark, sf_dir, "documents")
-    sents = F.filter(
-        F.split(F.col("text"), "[.!?]+"),
-        lambda s: F.length(F.trim(s)) > 0,
-    )
-    words = F.filter(
-        F.split(F.col("text"), "[ \t\n\r]+"), lambda w: F.length(w) > 0
-    )
-    per_doc = d.select(
-        "source",
-        F.size(sents).cast("bigint").alias("n_sent"),
-        F.size(words).cast("bigint").alias("n_words"),
-    )
-    return (
-        per_doc.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_sent").cast("bigint").alias("total_sentences"),
-            F.sum("n_words").cast("bigint").alias("total_words"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "total_sentences",
-            "total_words",
-            (
-                F.col("total_sentences").cast("double")
-                / F.col("n_docs").cast("double")
-            ).alias("sentences_per_doc"),
-            F.when(
-                F.col("total_sentences") > 0,
-                F.col("total_words").cast("double")
-                / F.col("total_sentences").cast("double"),
-            ).alias("words_per_sentence"),
-        )
-        .orderBy("source")
-    )
+    return run_sql(spark, sf_dir, "text_sentence_stats")
 
 
 # ---------------------------------------------------------------------------
@@ -3488,7 +3414,7 @@ def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "agg"),
     oracle="""
         WITH toks AS (
-            SELECT source, UNNEST(list_filter(
+            SELECT source, UNNEST(filter(
                        regexp_split_to_array(lower(text), '[^a-z]+'),
                        t -> len(t) > 0)) AS tok
             FROM documents
@@ -3564,7 +3490,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=r"""
         WITH toks AS (
             SELECT lower(tok) AS tok
-            FROM (SELECT unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+            FROM (SELECT unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+', 0))
                       AS tok
                   FROM documents)
         ),
@@ -3577,7 +3503,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS sum_freq_sq,
                CAST('10000.0' AS DOUBLE)
                  * CAST(CAST(SUM(CAST(f AS DECIMAL(38,0)) * f) - SUM(f)
-                        AS VARCHAR) AS DOUBLE)
+                        AS STRING) AS DOUBLE)
                  / (CAST(SUM(f) AS DOUBLE) * CAST(SUM(f) AS DOUBLE))
                    AS yule_k
         FROM uni
@@ -3733,7 +3659,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH toks AS (
             SELECT source, lower(tok) AS tok
             FROM (SELECT source,
-                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+', 0))
                              AS tok
                   FROM documents)
         ),
@@ -3814,7 +3740,7 @@ def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         percell AS (
             SELECT doc_id, lower(tok) AS tok, CAST(COUNT(*) AS BIGINT) AS c
             FROM (SELECT doc_id,
-                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+'))
+                         unnest(regexp_extract_all(text, '[a-zA-Z0-9_]+', 0))
                              AS tok
                   FROM documents)
             GROUP BY doc_id, tok
@@ -3902,14 +3828,14 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH toks AS (
             SELECT doc_id, source,
-                   list_filter(string_split(text, ' '), t -> t <> '') AS ts
+                   filter(string_split(text, ' '), t -> t <> '') AS ts
             FROM documents
         ),
         grams AS MATERIALIZED (
             SELECT DISTINCT doc_id, source,
                    array_to_string(ts[i:i+4], ' ') AS g
-            FROM toks, UNNEST(generate_series(1, len(ts) - 4)) AS u(i)
-            WHERE len(ts) >= 5
+            FROM toks, UNNEST(generate_series(1, array_length(ts) - 4)) AS u(i)
+            WHERE array_length(ts) >= 5
         ),
         dfs AS MATERIALIZED (
             SELECT g, CAST(COUNT(*) AS BIGINT) AS df
@@ -3981,14 +3907,14 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH per_doc AS (
             SELECT lang,
-                   CAST(len(list_filter(string_split(text, ' '),
+                   CAST(array_length(filter(string_split(text, ' '),
                         t -> t <> '')) AS BIGINT) AS w,
-                   CAST(GREATEST(1, len(regexp_extract_all(text,
-                        '[.!?]+'))) AS BIGINT) AS s,
-                   CAST(len(list_filter(string_split(text, ' '),
+                   CAST(GREATEST(1, array_length(regexp_extract_all(text,
+                        '[.!?]+', 0))) AS BIGINT) AS s,
+                   CAST(array_length(filter(string_split(text, ' '),
                         t -> t <> '' AND
-                             len(regexp_extract_all(lower(t),
-                                 '[aeiouy]+')) >= 3)) AS BIGINT) AS poly
+                             array_length(regexp_extract_all(lower(t),
+                                 '[aeiouy]+', 0)) >= 3)) AS BIGINT) AS poly
             FROM documents
         ),
         scored AS (
@@ -4080,11 +4006,11 @@ def text_smog_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH per_doc AS (
             SELECT lang,
-                   CAST(len(list_filter(string_split(text, ' '),
+                   CAST(array_length(filter(string_split(text, ' '),
                         t -> t <> '')) AS BIGINT) AS w,
-                   CAST(GREATEST(1, len(regexp_extract_all(text,
-                        '[.!?]+'))) AS BIGINT) AS s,
-                   CAST(len(regexp_extract_all(text, '[A-Za-z0-9]'))
+                   CAST(GREATEST(1, array_length(regexp_extract_all(text,
+                        '[.!?]+', 0))) AS BIGINT) AS s,
+                   CAST(array_length(regexp_extract_all(text, '[A-Za-z0-9]', 0))
                         AS BIGINT) AS ch
             FROM documents
         ),
@@ -4117,43 +4043,7 @@ def text_ari_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     string-routed constants; the per-language mean rides the
     floor-scale fsum (order-free reduction). One scan, one k-language
     shuffle, all JVM-side."""
-    d = load_table_parallel(spark, sf_dir, "documents")
-    per_doc = d.select(
-        "lang",
-        F.size(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        )
-        .cast("bigint")
-        .alias("w"),
-        F.greatest(
-            F.lit(1),
-            F.size(F.regexp_extract_all(F.col("text"), F.lit("[.!?]+"), 0)),
-        )
-        .cast("bigint")
-        .alias("s"),
-        F.size(
-            F.regexp_extract_all(F.col("text"), F.lit("[A-Za-z0-9]"), 0)
-        )
-        .cast("bigint")
-        .alias("ch"),
-    ).filter(F.col("w") > 0)
-    ari = (
-        F.lit(4.71) * (F.col("ch").cast("double") / F.col("w").cast("double"))
-        + F.lit(0.5) * (F.col("w").cast("double") / F.col("s").cast("double"))
-        - F.lit(21.43)
-    )
-    return (
-        per_doc.select("lang", "ch", ari.alias("ari"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("ch").cast("bigint").alias("total_alnum_chars"),
-            (fsum(F.col("ari")) / F.count(F.lit(1)).cast("double")).alias(
-                "mean_ari_grade"
-            ),
-        )
-        .orderBy("lang")
-    )
+    return run_sql(spark, sf_dir, "text_ari_index")
 
 
 @register(
@@ -4195,7 +4085,7 @@ def text_ari_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE b.cxy >= 5
         )
         SELECT w1, w2, cxy, c1, c2,
-               CAST(CAST(pmi_q6 AS VARCHAR) AS DOUBLE) AS pmi
+               CAST(CAST(pmi_q6 AS STRING) AS DOUBLE) AS pmi
         FROM scored
         ORDER BY pmi_q6 DESC, w1, w2
         LIMIT 20

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from finance_etl_spark.functions.money import (
-    DEC,
     as_d,
     dsum,
     o_dsum,
@@ -229,8 +228,8 @@ def ts_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                MIN(price) AS low,
                MAX(CASE WHEN rn_close = 1 THEN price END) AS close,
                COUNT(*) AS n_trades,
-               CAST(CAST(SUM(CAST(price AS DECIMAL(12,2)) * CAST(qty AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE)
-                 / CAST(CAST(SUM(CAST(qty AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS vwap
+               CAST(CAST(SUM(CAST(price AS DECIMAL(12,2)) * CAST(qty AS DECIMAL(12,2))) AS STRING) AS DOUBLE)
+                 / CAST(CAST(SUM(CAST(qty AS DECIMAL(12,2))) AS STRING) AS DOUBLE) AS vwap
         FROM r GROUP BY bar_month, l_returnflag
     """,
 )
@@ -392,12 +391,9 @@ def ts_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (grain, bucket, type) cells before the exchange. Decimal sums are
     exactly associative, so every level equals its direct GROUP BY
     bit-for-bit (the oracle runs the naive UNION of three GROUP BYs).
-    Round-15 reshape (guide §2.4): the previous minute-persist +
-    re-aggregate chain planned THREE parquet scans (no exchange reuse
-    across the union branches) and raced three consumers on the lazy
-    cache; measured min-of-5 at sf0.1: persist chain 1.07 s, uncached
-    3-scan union 0.59 s, this single-pass grouping-sets shape 0.45 s —
-    and at 100 TB the scan happens once instead of three times."""
+    That union plans THREE parquet scans (no exchange reuse across its
+    branches); this shape scans once, which is what counts at 100 TB.
+    At sf0.1 on 4 cores the two shapes run within noise of each other."""
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("d"),
         F.date_trunc("hour", "ts").alias("h"),
@@ -1026,8 +1022,8 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM ticks
         )
         SELECT event_type, d,
-               (CAST(CAST(SUM(vm * dt_us) AS VARCHAR) AS DOUBLE) / 1e6)
-                   / CAST(CAST(SUM(dt_us) AS VARCHAR) AS DOUBLE) AS twap,
+               (CAST(CAST(SUM(vm * dt_us) AS STRING) AS DOUBLE) / 1e6)
+                   / CAST(CAST(SUM(dt_us) AS STRING) AS DOUBLE) AS twap,
                CAST(COUNT(*) AS BIGINT) AS n_ticks
         FROM spans
         GROUP BY 1, 2
@@ -1043,32 +1039,7 @@ def ts_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact; the final division is one IEEE op. One
     (type, day)-partitioned lead window + one hash agg, both over the
     tick relation, no self-join."""
-    MICRO18 = "decimal(18,0)"
-    ticks = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("view", "click"))
-        .select(
-            "event_type",
-            F.col("ts").cast("date").alias("d"),
-            "ts",
-            "event_id",
-            F.floor(F.col("value") * 1e6).cast(MICRO18).alias("vm"),
-        )
-    )
-    w = Window.partitionBy("event_type", "d").orderBy("ts", "event_id")
-    day_end = F.date_add("d", 1).cast("timestamp")
-    dt_us = (
-        F.unix_micros(F.coalesce(F.lead("ts").over(w), day_end))
-        - F.unix_micros("ts")
-    ).cast(MICRO18)
-    spans = ticks.select("event_type", "d", "vm", dt_us.alias("dt_us"))
-    return spans.groupBy("event_type", "d").agg(
-        (
-            (F.sum(F.col("vm") * F.col("dt_us")).cast("double") / F.lit(1e6))
-            / F.sum("dt_us").cast("double")
-        ).alias("twap"),
-        F.count(F.lit(1)).alias("n_ticks"),
-    )
+    return run_sql(spark, sf_dir, "ts_twap")
 
 
 @register(
@@ -1120,7 +1091,7 @@ def ts_resample_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
         base AS (
             SELECT event_type, dow,
                    CAST(SUM(n) AS BIGINT) AS dow_events,
-                   CAST(CAST(SUM(v) AS VARCHAR) AS DOUBLE) AS dow_value,
+                   CAST(CAST(SUM(v) AS STRING) AS DOUBLE) AS dow_value,
                    CAST(COUNT(*) AS BIGINT) AS dow_days
             FROM daily GROUP BY 1, 2
         )
@@ -1179,7 +1150,7 @@ def ts_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH daily AS (
             SELECT event_type, CAST(ts AS DATE) AS d,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(15,4))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(value AS DECIMAL(15,4))) AS STRING)
                         AS DOUBLE) AS v
             FROM events GROUP BY 1, 2
         )
@@ -1438,11 +1409,11 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         s AS (
             SELECT event_type, k, COUNT(*) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(xl) AS VARCHAR) AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(x * xl) AS VARCHAR) AS DOUBLE) AS sxy,
-                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) AS VARCHAR) AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(xl * xl) AS VARCHAR) AS DOUBLE) AS syy
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(xl) AS STRING) AS DOUBLE) AS sy,
+                   CAST(CAST(SUM(x * xl) AS STRING) AS DOUBLE) AS sxy,
+                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) AS STRING) AS DOUBLE) AS sxx,
+                   CAST(CAST(SUM(xl * xl) AS STRING) AS DOUBLE) AS syy
             FROM lagged WHERE xl IS NOT NULL
             GROUP BY event_type, k
         )
@@ -1762,16 +1733,16 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         seas AS (
             SELECT event_type, wd,
-                   CAST(CAST(SUM(det7) AS VARCHAR) AS DOUBLE)
+                   CAST(CAST(SUM(det7) AS STRING) AS DOUBLE)
                      / (7.0 * COUNT(*)) AS seasonal
             FROM det GROUP BY 1, 2
         )
         SELECT t.event_type, t.d,
-               CAST(CAST(t.x AS VARCHAR) AS DOUBLE) AS x,
-               CAST(CAST(t.sum7 AS VARCHAR) AS DOUBLE) / 7.0 AS trend,
+               CAST(CAST(t.x AS STRING) AS DOUBLE) AS x,
+               CAST(CAST(t.sum7 AS STRING) AS DOUBLE) / 7.0 AS trend,
                s.seasonal,
-               CAST(CAST(t.x AS VARCHAR) AS DOUBLE)
-                 - CAST(CAST(t.sum7 AS VARCHAR) AS DOUBLE) / 7.0
+               CAST(CAST(t.x AS STRING) AS DOUBLE)
+                 - CAST(CAST(t.sum7 AS STRING) AS DOUBLE) / 7.0
                  - s.seasonal AS remainder
         FROM det t JOIN seas s
           ON s.event_type = t.event_type AND s.wd = t.wd
@@ -1789,56 +1760,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     one IEEE double expression — so the full decomposition is
     hash-checkable. Windows partition by series over O(days) rows;
     the weekday seasonal join is a broadcast of |series|·7 rows."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.sum(F.col("value").cast(DEC)).cast(DEC).alias("x"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-3, 3)
-    )
-    ma = daily.select(
-        "event_type",
-        "d",
-        "x",
-        F.sum("x").over(w).cast(DEC).alias("sum7"),
-        F.count(F.lit(1)).over(w).alias("n7"),
-    )
-    det = ma.filter(F.col("n7") == 7).select(
-        "event_type",
-        "d",
-        "x",
-        "sum7",
-        (F.lit(7).cast("decimal(2,0)") * F.col("x") - F.col("sum7")).alias(
-            "det7"
-        ),
-        F.dayofweek(F.col("d")).alias("wd_sun1"),
-    )
-    # isodow: Mon=1..Sun=7; Spark dayofweek: Sun=1..Sat=7
-    det = det.withColumn(
-        "wd", F.when(F.col("wd_sun1") == 1, 7).otherwise(F.col("wd_sun1") - 1)
-    )
-    seas = det.groupBy("event_type", "wd").agg(
-        (
-            F.sum("det7").cast("double")
-            / (F.lit(7.0) * F.count(F.lit(1)))
-        ).alias("seasonal")
-    )
-    x_d = F.col("x").cast("double")
-    trend = F.col("sum7").cast("double") / F.lit(7.0)
-    return (
-        det.join(F.broadcast(seas), ["event_type", "wd"])
-        .select(
-            "event_type",
-            "d",
-            x_d.alias("x"),
-            trend.alias("trend"),
-            "seasonal",
-            (x_d - trend - F.col("seasonal")).alias("remainder"),
-        )
-        .orderBy("event_type", "d")
-    )
+    return run_sql(spark, sf_dir, "ts_seasonal_decompose")
 
 
 @register(
@@ -2024,8 +1946,8 @@ def ts_pattern_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
                    {o_dsum("x2")} AS b2,
                    MAX(CASE WHEN x1 IS NOT NULL THEN
                        struct_pack(d := d,
-                                   xn := CAST(CAST(x AS VARCHAR) AS DOUBLE),
-                                   xp := CAST(CAST(x1 AS VARCHAR) AS DOUBLE))
+                                   xn := CAST(CAST(x AS STRING) AS DOUBLE),
+                                   xp := CAST(CAST(x1 AS STRING) AS DOUBLE))
                        END) AS lastrow
             FROM lagged
             GROUP BY event_type
@@ -2161,8 +2083,8 @@ _DTW_SENT = 100_000_000_000_000_000  # unreachable-cell sentinel
         ps AS (
             SELECT a.event_type AS ta, b.event_type AS tb,
                    a.xs AS va, b.xs AS vb,
-                   len(a.xs) AS n, len(b.xs) AS m,
-                   GREATEST(10, abs(len(a.xs) - len(b.xs)) + 5) AS w
+                   array_length(a.xs) AS n, array_length(b.xs) AS m,
+                   GREATEST(10, abs(array_length(a.xs) - array_length(b.xs)) + 5) AS w
             FROM ser a JOIN ser b ON a.event_type < b.event_type
         ),
         dp AS (
@@ -2354,7 +2276,7 @@ _HAAR_LEVELS = 5  # 30-day series padded to 32 = 2^5
                    CAST(COUNT(*) AS BIGINT) AS n_coeffs,
                    CAST(CAST(SUM(CAST(dcoef AS DECIMAL(38,0))
                                  * CAST(dcoef AS DECIMAL(38,0)))
-                        AS VARCHAR) AS DOUBLE) AS energy
+                        AS STRING) AS DOUBLE) AS energy
             FROM lvl{k} GROUP BY event_type''' for k in range(1, _HAAR_LEVELS + 1)
             )}
         )
@@ -2974,15 +2896,15 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         stats AS (
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) AS VARCHAR) AS DOUBLE) AS sxx
+                   CAST(CAST(SUM(x) AS STRING) AS DOUBLE) AS sx,
+                   CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * x) AS STRING) AS DOUBLE) AS sxx
             FROM daily GROUP BY event_type
         ),
         seg AS (
             SELECT d.event_type,
                    CAST((d.rn - 1) // 5 AS BIGINT) AS seg_id,
                    CAST(COUNT(*) AS BIGINT) AS seg_n,
-                   CAST(CAST(SUM(d.x) AS VARCHAR) AS DOUBLE) AS seg_s
+                   CAST(CAST(SUM(d.x) AS STRING) AS DOUBLE) AS seg_s
             FROM daily d GROUP BY 1, 2
         ),
         z AS (
@@ -3485,10 +3407,10 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  - CAST(t AS DECIMAL(38,0)) * sb)
                            - MIN(CAST(m AS DECIMAL(38,0)) * prefix
                                  - CAST(t AS DECIMAL(38,0)) * sb)
-                        AS VARCHAR) AS DOUBLE) AS rng,
+                        AS STRING) AS DOUBLE) AS rng,
                    CAST(CAST(CAST(MAX(m) AS DECIMAL(38,0)) * MAX(sq)
                              - CAST(MAX(sb) AS DECIMAL(38,0)) * MAX(sb)
-                        AS VARCHAR) AS DOUBLE) AS var_num
+                        AS STRING) AS DOUBLE) AS var_num
             FROM pre GROUP BY event_type, m, b
         ),
         rs AS (
@@ -3522,9 +3444,9 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM pts GROUP BY event_type
         )
         SELECT event_type, k, rs_5, rs_30,
-               (CAST(k AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
+               (CAST(k AS DOUBLE) * CAST(CAST(sxy AS STRING) AS DOUBLE)
                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / (CAST(k AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
+                 / (CAST(k AS DOUBLE) * CAST(CAST(sxx AS STRING) AS DOUBLE)
                   - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS hurst
         FROM fold ORDER BY event_type
     """,
@@ -3936,7 +3858,7 @@ def ts_lttb_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(xq) AS BIGINT) AS sx,
                    CAST(CAST(SUM(CAST(xq AS DECIMAL(19,0)) * xq)
-                        AS VARCHAR) AS DOUBLE) AS sxx
+                        AS STRING) AS DOUBLE) AS sxx
             FROM daily GROUP BY event_type
         ),
         pre AS (
@@ -3952,7 +3874,7 @@ def ts_lttb_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
                         - CAST(p.rn AS DECIMAL(38,0)) * s.sx)
                        * (CAST(s.n AS DECIMAL(38,0)) * p.prefix
                           - CAST(p.rn AS DECIMAL(38,0)) * s.sx)
-                   ) AS VARCHAR) AS DOUBLE) AS ss2_scaled
+                   ) AS STRING) AS DOUBLE) AS ss2_scaled
             FROM pre p JOIN st s ON s.event_type = p.event_type
             GROUP BY p.event_type
         ),
@@ -3962,7 +3884,7 @@ def ts_lttb_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(a.xq) AS BIGINT) AS spx,
                    CAST(SUM(b.xq) AS BIGINT) AS spy,
                    CAST(CAST(SUM(CAST(a.xq AS DECIMAL(19,0)) * b.xq)
-                        AS VARCHAR) AS DOUBLE) AS spxy
+                        AS STRING) AS DOUBLE) AS spxy
             FROM daily a
             CROSS JOIN (SELECT unnest([1, 2, 3]) AS l) ks
             JOIN daily b ON b.event_type = a.event_type
@@ -4631,10 +4553,10 @@ def ts_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame
             FROM dow GROUP BY segment
         )
         SELECT dow.segment, CAST(dow.wd AS INT) AS weekday, dow.n_days,
-               CAST(CAST(dow.cents AS VARCHAR) AS DOUBLE)
+               CAST(CAST(dow.cents AS STRING) AS DOUBLE)
                  / dow.n_days / 100 AS avg_revenue,
-               (CAST(CAST(dow.cents AS VARCHAR) AS DOUBLE) / dow.n_days)
-                 / (CAST(CAST(seg.cents_all AS VARCHAR) AS DOUBLE)
+               (CAST(CAST(dow.cents AS STRING) AS DOUBLE) / dow.n_days)
+                 / (CAST(CAST(seg.cents_all AS STRING) AS DOUBLE)
                     / seg.n_all) AS rel_effect
         FROM dow JOIN seg ON seg.segment = dow.segment
         ORDER BY dow.segment, weekday
@@ -4651,35 +4573,7 @@ def ts_calendar_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents in DECIMAL(38,0); means divide out as doubles at
     the edge via the VARCHAR route. One corpus agg, then a 35-row
     relation."""
-    daily = seg_daily(spark, sf_dir)
-    dow = daily.groupBy(
-        "segment", F.weekday("d").alias("wd")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sum(F.col("x").cast("decimal(18,2)") * 100)
-        .cast("decimal(38,0)")
-        .alias("cents"),
-    )
-    seg = dow.groupBy("segment").agg(
-        F.sum("n_days").cast("bigint").alias("n_all"),
-        F.sum("cents").cast("decimal(38,0)").alias("cents_all"),
-    )
-    return (
-        dow.join(F.broadcast(seg), "segment")
-        .select(
-            "segment",
-            F.col("wd").cast("int").alias("weekday"),
-            "n_days",
-            (as_d(F.col("cents")) / F.col("n_days") / 100).alias(
-                "avg_revenue"
-            ),
-            (
-                (as_d(F.col("cents")) / F.col("n_days"))
-                / (as_d(F.col("cents_all")) / F.col("n_all"))
-            ).alias("rel_effect"),
-        )
-        .orderBy("segment", "weekday")
-    )
+    return run_sql(spark, sf_dir, "ts_calendar_effects")
 
 
 @register(
@@ -4838,26 +4732,26 @@ def ts_dickey_fuller_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(ss_wd) AS DECIMAL(38,0)) AS ss,
                    {o_ordered_fold_sum(
                        'wd',
-                       'CAST(CAST(s_wd AS VARCHAR) AS DOUBLE) * CAST(CAST(s_wd AS'
-                       ' VARCHAR) AS DOUBLE) / n_wd',
+                       'CAST(CAST(s_wd AS STRING) AS DOUBLE) * CAST(CAST(s_wd AS'
+                       ' STRING) AS DOUBLE) / n_wd',
                    )} AS within_ms
             FROM dowm GROUP BY segment
         )
         SELECT segment, n,
-               (CAST(CAST(ss AS VARCHAR) AS DOUBLE)
-                - CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                  * CAST(CAST(s AS VARCHAR) AS DOUBLE) / n) / 1e4
+               (CAST(CAST(ss AS STRING) AS DOUBLE)
+                - CAST(CAST(s AS STRING) AS DOUBLE)
+                  * CAST(CAST(s AS STRING) AS DOUBLE) / n) / 1e4
                    AS ss_total_dollars2,
-               (CAST(CAST(ss AS VARCHAR) AS DOUBLE) - within_ms) / 1e4
+               (CAST(CAST(ss AS STRING) AS DOUBLE) - within_ms) / 1e4
                    AS ss_resid_dollars2,
-               CASE WHEN CAST(CAST(ss AS VARCHAR) AS DOUBLE)
-                         - CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                           * CAST(CAST(s AS VARCHAR) AS DOUBLE) / n > 0 THEN
+               CASE WHEN CAST(CAST(ss AS STRING) AS DOUBLE)
+                         - CAST(CAST(s AS STRING) AS DOUBLE)
+                           * CAST(CAST(s AS STRING) AS DOUBLE) / n > 0 THEN
                  GREATEST(CAST(0 AS DOUBLE),
-                   1 - (CAST(CAST(ss AS VARCHAR) AS DOUBLE) - within_ms)
-                     / (CAST(CAST(ss AS VARCHAR) AS DOUBLE)
-                        - CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                          * CAST(CAST(s AS VARCHAR) AS DOUBLE) / n))
+                   1 - (CAST(CAST(ss AS STRING) AS DOUBLE) - within_ms)
+                     / (CAST(CAST(ss AS STRING) AS DOUBLE)
+                        - CAST(CAST(s AS STRING) AS DOUBLE)
+                          * CAST(CAST(s AS STRING) AS DOUBLE) / n))
                END AS seasonal_strength
         FROM seg ORDER BY segment
     """,
@@ -5005,11 +4899,11 @@ _CCF_RET_SQL = f"""
             SELECT lag, CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(rb) AS BIGINT) AS sb,
                    CAST(SUM(rm) AS BIGINT) AS sm,
-                   CAST(CAST(SUM(CAST(rb AS DECIMAL(19,0)) * rb) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(rb AS DECIMAL(19,0)) * rb) AS STRING)
                         AS DOUBLE) AS sbb,
-                   CAST(CAST(SUM(CAST(rm AS DECIMAL(19,0)) * rm) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(rm AS DECIMAL(19,0)) * rm) AS STRING)
                         AS DOUBLE) AS smm,
-                   CAST(CAST(SUM(CAST(rb AS DECIMAL(19,0)) * rm) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(rb AS DECIMAL(19,0)) * rm) AS STRING)
                         AS DOUBLE) AS sbm
             FROM j GROUP BY lag
         )
@@ -5208,7 +5102,7 @@ _EWMA_W_SQL = ", ".join(
         terms AS (
             SELECT t.segment, t.n_all, t.k,
                    w.w * CAST(CAST(CAST(t.r AS DECIMAL(19,0)) * t.r
-                                   AS VARCHAR) AS DOUBLE) AS term
+                                   AS STRING) AS DOUBLE) AS term
             FROM tail t JOIN wts w ON w.k = t.k
             WHERE t.k < {_EWMA_K} AND t.n_all >= {_EWMA_K}
         ),
@@ -5292,15 +5186,15 @@ def ts_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
         lag_suff AS (
             SELECT lg.k,
                    CAST(COUNT(*) AS BIGINT) AS nk,
-                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS sx,
-                   CAST(CAST(SUM(CAST(b.q AS DECIMAL(19,0))) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(b.q AS DECIMAL(19,0))) AS STRING)
                         AS DOUBLE) AS sy,
-                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0)) * b.q) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0)) * b.q) AS STRING)
                         AS DOUBLE) AS sxy,
-                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0)) * a.q) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(a.q AS DECIMAL(19,0)) * a.q) AS STRING)
                         AS DOUBLE) AS sxx,
-                   CAST(CAST(SUM(CAST(b.q AS DECIMAL(19,0)) * b.q) AS VARCHAR)
+                   CAST(CAST(SUM(CAST(b.q AS DECIMAL(19,0)) * b.q) AS STRING)
                         AS DOUBLE) AS syy
             FROM (VALUES (1), (2), (3), (4)) lg(k)
             JOIN zz a ON TRUE
@@ -5444,9 +5338,9 @@ def ts_arch_lm_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lagged AS (
             SELECT event_type, rn,
-                   CAST(CAST(x AS VARCHAR) AS DOUBLE) AS xd,
-                   CAST(CAST(LAG(x, 1) OVER w AS VARCHAR) AS DOUBLE) AS l1,
-                   CAST(CAST(LAG(x, 7) OVER w AS VARCHAR) AS DOUBLE) AS l7
+                   CAST(CAST(x AS STRING) AS DOUBLE) AS xd,
+                   CAST(CAST(LAG(x, 1) OVER w AS STRING) AS DOUBLE) AS l1,
+                   CAST(CAST(LAG(x, 7) OVER w AS STRING) AS DOUBLE) AS l7
             FROM daily
             WINDOW w AS (PARTITION BY event_type ORDER BY rn)
         ),
@@ -5645,79 +5539,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair count is bounded at ~350^2 per season regardless of corpus
     size), keyed so a cluster partitions by (type, weekday). z is the
     single presentation expression (IEEE sqrt + one division)."""
-    daily = daily_q6(spark, sf_dir).withColumn(
-        "wd", F.weekday("d").cast("int")
-    )
-    a = daily.select(
-        "event_type", "wd", F.col("d").alias("d1"), F.col("v").alias("v1")
-    )
-    b = daily.select(
-        "event_type", "wd", F.col("d").alias("d2"), F.col("v").alias("v2")
-    )
-    s_wd = (
-        a.join(b, ["event_type", "wd"])
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("event_type", "wd")
-        .agg(
-            F.sum(
-                F.when(F.col("v2") > F.col("v1"), 1)
-                .when(F.col("v2") < F.col("v1"), -1)
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("s")
-        )
-    )
-    n_wd = daily.groupBy("event_type", "wd").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    tt_wd = (
-        daily.groupBy("event_type", "wd", "v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
-        .groupBy("event_type", "wd")
-        .agg(
-            F.sum(
-                F.col("t") * (F.col("t") - 1) * (F.lit(2) * F.col("t") + 5)
-            )
-            .cast("bigint")
-            .alias("tt")
-        )
-    )
-    per_wd = (
-        n_wd.join(s_wd, ["event_type", "wd"], "left")
-        .join(tt_wd, ["event_type", "wd"])
-        .select(
-            "event_type",
-            "wd",
-            "n",
-            F.coalesce(F.col("s"), F.lit(0)).alias("s"),
-            (
-                F.col("n") * (F.col("n") - 1) * (F.lit(2) * F.col("n") + 5)
-                - F.col("tt")
-            ).alias("varnum"),
-        )
-    )
-    agg = per_wd.groupBy("event_type").agg(
-        F.sum("n").cast("bigint").alias("n_days"),
-        F.sum("s").cast("bigint").alias("s_total"),
-        F.sum("varnum").cast("bigint").alias("varnum_total"),
-    )
-    s_adj = (
-        F.when(F.col("s_total") > 0, F.col("s_total") - 1)
-        .when(F.col("s_total") < 0, F.col("s_total") + 1)
-        .otherwise(0)
-        .cast("double")
-    )
-    z = F.when(
-        F.col("varnum_total") > 0,
-        s_adj
-        / F.sqrt(
-            F.col("varnum_total").cast("double") / F.lit(18).cast("double")
-        ),
-    )
-    return agg.select(
-        "event_type", "n_days", "s_total", "varnum_total", z.alias("z")
-    )
+    return run_sql(spark, sf_dir, "ts_seasonal_mann_kendall")
 
 
 # ---------------------------------------------------------------------------
@@ -5879,10 +5701,10 @@ def ts_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         pw AS (
             SELECT event_type, kf,
-                   (CAST(CAST(sc AS VARCHAR) AS DOUBLE)
-                      * CAST(CAST(sc AS VARCHAR) AS DOUBLE)
-                    + CAST(CAST(ss AS VARCHAR) AS DOUBLE)
-                      * CAST(CAST(ss AS VARCHAR) AS DOUBLE))
+                   (CAST(CAST(sc AS STRING) AS DOUBLE)
+                      * CAST(CAST(sc AS STRING) AS DOUBLE)
+                    + CAST(CAST(ss AS STRING) AS DOUBLE)
+                      * CAST(CAST(ss AS STRING) AS DOUBLE))
                    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
                       * CAST(n AS DOUBLE)) / 1e12 AS p
             FROM terms

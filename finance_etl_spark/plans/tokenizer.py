@@ -39,7 +39,7 @@ _TOKEN_SQL = "[a-z0-9'']+"  # same pattern, SQL-escaped quote
 _WORD_FREQ_SQL = f"""
     SELECT u.word, CAST(COUNT(*) AS BIGINT) AS freq
     FROM documents,
-         unnest(regexp_extract_all(lower(text), '{_TOKEN_SQL}')) u(word)
+         unnest(regexp_extract_all(lower(text), '{_TOKEN_SQL}', 0)) u(word)
     GROUP BY u.word
 """
 
@@ -57,7 +57,7 @@ def _bpe_rounds_sql(n_merges: int) -> str:
         wf AS MATERIALIZED ({_WORD_FREQ_SQL}),
         state_0 AS MATERIALIZED (
             SELECT word, freq,
-                   list_filter(string_split(word, ''), c -> c <> '') AS symbols
+                   filter(string_split(word, ''), c -> c <> '') AS symbols
             FROM wf
         )"""
     ]
@@ -308,7 +308,7 @@ top_words AS MATERIALIZED (
 ),
 chars AS MATERIALIZED (
     SELECT DISTINCT c FROM (
-        SELECT unnest(list_filter(string_split(word, ''), c -> c <> '')) AS c
+        SELECT unnest(filter(string_split(word, ''), c -> c <> '')) AS c
         FROM wf
     )
 ),
@@ -323,7 +323,7 @@ vocab AS MATERIALIZED (
 ),
 positions AS MATERIALIZED (
     SELECT word, generate_subscripts(
-        list_filter(string_split(word, ''), c -> c <> ''), 1) AS i
+        filter(string_split(word, ''), c -> c <> ''), 1) AS i
     FROM wf
 ),
 best AS MATERIALIZED (
@@ -335,7 +335,7 @@ best AS MATERIALIZED (
     ) WHERE rn = 1
 ),
 rec AS (
-    SELECT word, freq, 1 AS i, 1 AS step, CAST(NULL AS VARCHAR) AS piece
+    SELECT word, freq, 1 AS i, 1 AS step, CAST(NULL AS STRING) AS piece
     FROM wf
     UNION ALL
     SELECT r.word, r.freq, r.i + coalesce(b.l, 1), r.step + 1,
@@ -429,7 +429,7 @@ ppw AS (
 src AS (
     SELECT source, u.word, CAST(COUNT(*) AS BIGINT) AS n
     FROM documents,
-         unnest(regexp_extract_all(lower(text), '""" + _TOKEN_SQL + """')) u(word)
+         unnest(regexp_extract_all(lower(text), '""" + _TOKEN_SQL + """', 0)) u(word)
     GROUP BY source, u.word
 )
 SELECT s.source,

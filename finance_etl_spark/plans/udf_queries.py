@@ -151,7 +151,7 @@ def udf_grouped_agg_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("agg", "sketch", "pandas-udf", "text"),
     oracle="""
         WITH toks AS (
-            SELECT unnest(list_filter(string_split(text, ' '),
+            SELECT unnest(filter(string_split(text, ' '),
                                       t -> t <> '')) AS tok
             FROM documents
         ), total AS (SELECT COUNT(*) AS n FROM toks)
@@ -377,7 +377,7 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         words AS (
             SELECT s.doc_id, w.word
             FROM sample s,
-                 LATERAL (SELECT unnest(list_filter(
+                 LATERAL (SELECT unnest(filter(
                      string_split(s.text, ' '), t -> t <> '')) AS word) w
         )
         SELECT len(word) AS word_len,

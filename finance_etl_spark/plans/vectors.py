@@ -388,7 +388,7 @@ def ivf_index(e: DataFrame) -> tuple[DataFrame, DataFrame]:
 # DuckDB floor-quantized mean of ``val`` per group (1e-9 grid)
 _QMEAN_SQL = (
     "CAST(CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * CAST(1e9 AS DOUBLE))"
-    " AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)"
+    " AS DECIMAL(38,0))) AS STRING) AS DOUBLE)"
     " / (CAST(COUNT(*) AS DOUBLE) * CAST(1e9 AS DOUBLE))"
 )
 
@@ -396,7 +396,7 @@ _QMEAN_SQL = (
 _IVF_INDEX_SQL = f"""
         seed16 AS (
             SELECT vec_id, embedding FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+            ORDER BY md5(CAST(vec_id AS STRING)), vec_id
             LIMIT {N_CLUSTERS}
         ),
         cents0 AS (
@@ -745,7 +745,7 @@ def _kmeans_clusters_sql(iters: int = 3) -> str:
     return f"""
         WITH seedk AS (
             SELECT vec_id, embedding FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {N_CLUSTERS}
+            ORDER BY md5(CAST(vec_id AS STRING)), vec_id LIMIT {N_CLUSTERS}
         ),
         kcents0 AS (
             SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster_id,
@@ -770,7 +770,7 @@ def _kmeans_clusters_sql(iters: int = 3) -> str:
         SELECT cluster_id,
                CAST(COUNT(*) AS BIGINT) AS n_vectors,
                CAST(CAST(SUM(CAST(FLOOR(c * CAST(1e10 AS DOUBLE))
-                        AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
+                        AS DECIMAL(38,0))) AS STRING) AS DOUBLE)
                  / (CAST(COUNT(*) AS DOUBLE) * CAST(1e10 AS DOUBLE))
                    AS mean_cohesion
         FROM coh GROUP BY cluster_id
@@ -996,7 +996,7 @@ def vec_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH seedk AS (
             SELECT vec_id, embedding FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {N_CLUSTERS}
+            ORDER BY md5(CAST(vec_id AS STRING)), vec_id LIMIT {N_CLUSTERS}
         ),
         kcents0 AS (
             SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster_id,
@@ -1111,7 +1111,7 @@ def _pq_sql() -> str:
     the value hash matches bit-for-bit (verified at all three SFs)."""
     qm = (
         "CAST(CAST(SUM(CAST(FLOOR({col} * CAST(1e9 AS DOUBLE))"
-        " AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)"
+        " AS DECIMAL(38,0))) AS STRING) AS DOUBLE)"
         " / (CAST(COUNT(*) AS DOUBLE) * CAST(1e9 AS DOUBLE))"
     )
     pivot = ",\n                   ".join(
@@ -1167,7 +1167,7 @@ def _pq_sql() -> str:
         ),
         sord AS (
             SELECT vec_id,
-                   ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
+                   ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS STRING)),
                                       vec_id) AS rn
             FROM embeddings
         ),
@@ -1612,7 +1612,7 @@ def vec_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(vn) AS DOUBLE) AS s1n,
                    CAST(CAST(SUM(CAST(vn AS DECIMAL(19,0))
                                  * CAST(vn AS DECIMAL(19,0)))
-                        AS VARCHAR) AS DOUBLE) AS s2n,
+                        AS STRING) AS DOUBLE) AS s2n,
                    MIN(v) AS min_v, MAX(v) AS max_v
             FROM q GROUP BY dim
         )
@@ -1946,7 +1946,7 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH q AS (
             SELECT vec_id, embedding, label FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+            ORDER BY md5(CAST(vec_id AS STRING)), vec_id
             LIMIT 40
         ),
         scored AS (
@@ -2844,7 +2844,7 @@ def vec_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a2.cluster_id,
                CAST(COUNT(*) AS BIGINT) AS n_vectors,
                CAST(CAST(SUM(CAST(a2.dq AS DECIMAL(38,0)))
-                    AS VARCHAR) AS DOUBLE) / 1e12 AS inertia,
+                    AS STRING) AS DOUBLE) / 1e12 AS inertia,
                CAST(SUM(CASE WHEN a1.cluster_id <> a2.cluster_id
                         THEN 1 ELSE 0 END) AS BIGINT) AS n_moved_in
         FROM a2 JOIN a1 ON a1.vec_id = a2.vec_id

@@ -162,14 +162,16 @@ def test_fee_tiering_marginal_formula_continuity(spark):
     """The bracket chain must equal the hand-computed marginal fee at
     boundary, interior, and top-tier volumes (continuity at tier
     edges is what distinguishes marginal from cliff pricing)."""
-    from finance_etl_spark.plans.finance import _FEE_TIERS, _tier_fee_expr
+    from finance_etl_spark.plans.finance import _FEE_TIERS, _tier_fee_sql
 
     rows = spark.createDataFrame(
         [(0.0,), (49999.0,), (50000.0,), (50001.0,), (150000.0,), (200000.0,)],
         "v double",
     ).select(
         F.col("v"),
-        (_tier_fee_expr(F.col("v").cast("decimal(30,10)")).cast("double") / 10000.0).alias("fee"),
+        (
+            F.expr(_tier_fee_sql("CAST(v AS DECIMAL(30,10))")).cast("double") / 10000.0
+        ).alias("fee"),
     )
     got = {r.v: r.fee for r in rows.collect()}
 
